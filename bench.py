@@ -1,16 +1,18 @@
-"""Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints
-ONE compact JSON line: {"metric": ..., "value": N, "unit": "sec",
-"queries": {"all": N}, "n_queries": K, "sf": ...}. Per-query warm and
-cold timings go to stderr and to BENCH_DETAIL.json (the recording
-harness keeps only a bounded tail of stdout — round 2's full per-query
-line outgrew it and the headline number was lost).
+"""Benchmark harness: runs every registered query, in name order, at
+$SPARK_GRAFT_SF_DIR (default: the sf0.1 fixture) on
+local[$SPARK_GRAFT_CPUS] and prints ONE compact JSON line:
+{"metric": ..., "value": N, "unit": "sec", "queries": {"all": N},
+"n_queries": K, "sf": ...}. Per-query warm and cold timings go to
+stderr and to BENCH_DETAIL.json (the recording harness keeps only a
+bounded tail of stdout — round 2's full per-query line outgrew it and
+the headline number was lost).
 
 Each query is forced to full materialization with the noop sink (no
 driver-side collect, no Arrow transfer cost in the measurement).
 
-Regression tracking: per-query deltas vs the latest BENCH_r*.json in the
-repo root are printed to STDERR (stdout stays one JSON line).
+Regression tracking: per-query deltas vs the previous detail record at
+the same scale and core count (:func:`detail_sidecar`) are printed to
+STDERR (stdout stays one JSON line).
 """
 
 from __future__ import annotations
@@ -25,291 +27,12 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from mysql_public_data_ingestor_spark.registry import all_queries
 from mysql_public_data_ingestor_spark.session import get_spark
 
-HEADLINE = [
-    "q1_pricing_summary",
-    "q5_revenue_by_nation",
-    "q3_shipping_priority",
-    "q6_forecast_revenue",
-    "window_topk_orders_per_customer",
-    "window_running_revenue",
-    "events_tumbling_hourly",
-    "events_sessionization",
-    "dedup_minhash_lsh",
-    "dedup_normalized_hash",
-    "knn_brute_cosine",
-    "text_tfidf_top_terms",
-    "text_quality_scores",
-    "pipeline_training_data_prep",
-    # round-2 additions (reported as new vs BENCH_r01)
-    "ann_lsh_topk",
-    "events_hourly_gap_fill",
-    "text_repetition_stats",
-    "q13_customer_distribution",
-    "q19_discounted_revenue",
-    "dedup_passage_windows",
-    "corpus_decontaminate_ngram_overlap",
-    "corpus_pack_sequences",
-    "embedding_centroid_outliers",
-    # round-2 batch 2: graph / anomaly / attribution / layout / DQ /
-    # variant / UDTF surface
-    "graph_degree_histogram",
-    "events_rolling_zscore",
-    "events_attribution_last_touch",
-    "events_variant_props",
-    "layout_zorder_stats",
-    "dq_expectations_orders",
-    # engine-native variant_explode twin of udtf_props_kv_flatten (the
-    # scale path for semi-structured flatten; the Python UDTF itself is
-    # the extension-point demo — registered + oracle-gated, but ~28x
-    # slower by construction, so it is not a headline plan)
-    "events_kv_flatten_native",
-    # round-2 batch 3: flagship composition + ML/clustering + smoothing
-    "pipeline_corpus_prep_full",
-    "ml_kmeans_lloyd",
-    "dedup_semantic_cells",
-    "ml_feature_scaling_pack",
-    "events_ewma_value",
-    # round-2 batch 4: training-output layout + embedding compression
-    "corpus_shuffle_shard",
-    "dq_referential_integrity",
-    "embedding_random_projection",
-    "embedding_int8_quant_stats",
-    "sample_weighted_topk",
-    "stats_ttest_ab",
-    # round-2 batch 5: drift / rank-test / seasonal / join-MV
-    "dq_psi_value_drift",
-    "stats_mann_whitney_ab",
-    "events_seasonal_hourly_baseline",
-    "mv_incremental_join_merge",
-    "stats_jackknife_mean_ci",
-    "events_time_to_convert",
-    "stats_mad_robust_outliers",
-    "corpus_filter_ablation",
-    "ml_user_feature_pack",
-    # round-3 additions: lexical retrieval dual of the ANN path +
-    # diversity-selection rerank over its dense counterpart
-    "text_bm25_topk",
-    "similarity_mmr_rerank",
-    # recursion-free CUSUM change-point + one-pass ANALYZE profile
-    "events_cusum_changepoint",
-    "dq_column_profile",
-    # round-3 batch 2: bitmap-partial exact distinct + classifier AUC
-    "sketch_bitmap_exact_distinct",
-    "ml_auc_by_lang",
-    # round-4: bloom-prefiltered referential anti-join (map-side prune
-    # of the fact->fact edge before the shuffle anti-join) + the
-    # selective ANN band geometry (both ends of the recall/selectivity
-    # trade benched)
-    "dq_referential_integrity_bloom",
-    "ann_lsh_selective_topk",
-    # round-5: the activated operators/roundfive.py batch (x10-scale
-    # pre-measured in SCALE.md before registration)
-    "corpus_temperature_mixture",
-    "privacy_l_diversity_audit",
-    "agg_topk_mergeable",
-    "dq_schema_drift",
-    "similarity_ann_multiprobe_topk",
-    "stats_logistic_gd",
-    "embedding_pq_assign_stats",
-    "events_scd_asof_snapshot",
-    "dq_uniqueness_violations",
-    "join_range_bucketed",
-    "graph_label_propagation",
-    "events_funnel_time_windowed",
-    "text_pmi_cooccurrence",
-    "layout_compaction_plan",
-    "text_langid_confusion",
-    "stats_welch_anova",
-    "ml_confusion_threshold_sweep",
-    "stats_pareto_by_nation",
-    "events_hourly_topk_users",
-    "events_late_arrival_audit",
-    "text_char_trigram_profile",
-    "corpus_dedup_survivorship",
-    "lineitem_shipment_latency",
-    # round-5 additions beyond the activated batch
-    "lineitem_shipment_latency_bucketed",
-    "corpus_decontaminated_train_stats",
-    "dedup_minhash_store_probe",
-    "similarity_pq_adc_topk",
-    "events_watermark_policy_audit",
-    "stats_bootstrap_mean_ci",
-    "dq_order_lineitem_reconciliation",
-    "stats_gini_by_nation",
-    "graph_common_neighbors_linkpred",
-    "text_rake_keywords_topk",
-    "privacy_pseudonymize_joinability",
-    "dq_freshness_lag_audit",
-    "dq_ab_sample_ratio_mismatch",
-    "dedup_simhash_pairs",
-    "stats_proportions_ztest",
-    "multimodal_chunk_manifest",
-    "corpus_shard_manifest_hash",
-    "stats_power_mde",
-    "events_heatmap_dow_hour",
-    # round-6 additions
-    "stats_ks_two_sample",
-    "stats_wilson_ci_by_nation",
-    "privacy_t_closeness_audit",
-    "events_acf_daily_lags",
-    "graph_kcore_membership",
-    "stats_theil_sen_trend",
-    "stats_spearman_corr",
-    "ml_ndcg_by_lang",
-    "privacy_dp_laplace_counts",
-    "text_zipf_fit",
-    "stats_changepoint_binseg",
-    "ml_pr_auc_by_lang",
-    "ml_naive_bayes_langid",
-    "ml_decision_stump",
-    "stats_kendall_tau_b",
-    "graph_degree_assortativity",
-    "events_holt_linear_fit",
-    "events_poisson_rate_test",
-    # round-7 backfill (VERDICT r6 item 3): the 19 roundsix2.py
-    # operators registered in round 6 with no wall-time record
-    "stats_hhi_supplier_concentration",
-    "stats_cramers_v_priority_status",
-    "stats_overdispersion_vmr",
-    "dq_completeness_profile",
-    "text_ttr_hapax_by_lang",
-    "events_interarrival_burstiness",
-    "ml_brier_score_by_lang",
-    "ml_mcc_threshold",
-    "ml_cohens_kappa_gates",
-    "ml_lift_deciles_by_lang",
-    "ml_score_ks_separation",
-    "stats_js_divergence_priority",
-    "stats_odds_ratio_woolf",
-    "stats_km_log_survival",
-    "ml_split_quality_metrics",
-    "graph_modularity_lpa",
-    "graph_local_clustering_topk",
-    "corpus_incremental_decontamination",
-    "similarity_ivfpq_topk",
-    # round-8 additions (graph family order matters: the shared
-    # edge/triangle warehouse tables materialize on first touch)
-    "graph_triangle_count",
-    "graph_edge_triangle_support",
-    "graph_bfs_frontier_hops",
-    "similarity_ivfpq_recall_audit",
-    "ml_logistic_fit_quality",
-    "sketch_fixedbin_quantile_merge",
-    "stats_cohens_d_priority",
-    "stats_trimmed_winsorized_price",
-    "stats_mcnemar_quality_rules",
-    "corpus_ngram_novelty_deciles",
-    "events_runs_test_daily",
-    # round-8 batch 2
-    "events_hourly_entropy_profile",
-    "stats_levene_priority",
-    "stats_cochran_q_gates",
-    "ml_calibration_slope_intercept",
-    "dq_iqr_outlier_fences",
-    "graph_khop_reach_per_seed",
-    # round-8 batch 3
-    "stats_kruskal_wallis_quantity",
-    "stats_mood_median_discount",
-    "stats_mutual_info_priority_segment",
-    "graph_adamic_adar_linkpred",
-    "dedup_minhash_recall_audit",
-    "stats_weibull_latency_fit",
-    "events_seasonal_strength",
-    "stats_grubbs_acctbal_nation",
-    "stats_negbin_hourly_fit",
-    "text_vocab_coverage_curve",
-    "stats_friedman_nation_priority",
-    # round-8 batch 4
-    "events_markov_stationary",
-    "dq_orderkey_gap_audit",
-    "stats_theil_index_nation",
-    "events_changepoint_pettitt",
-    "agg_mode_per_group",
-    "stats_ols_influence_daily",
-    # round-8 batch 5
-    "stats_bowley_skew_priority",
-    "stats_moments_skew_kurtosis",
-    "sketch_kmv_distinct_users",
-    "dq_interval_overlap_orders",
-    # round-8 batch 6 (jaccard after the other graph ops: it reuses
-    # the warehouse edge table they materialize)
-    "graph_jaccard_linkpred",
-    "stats_hodges_lehmann_quantity",
-    "stats_cliffs_delta_discount",
-    "stats_pythagorean_means_quantity",
-    "agg_weighted_median_price",
-    "dq_date_order_violations",
-    "dq_functional_dependency_audit",
-    "stats_wilcoxon_signed_rank_daily",
-    "stats_logrank_segments",
-    "stats_ljung_box_daily",
-    "text_simpson_diversity_by_lang",
-    # round-9 activation of the round-8-banked queue (VERDICT r8 item 1)
-    "stats_cvm_two_sample",
-    "text_term_burstiness_topk",
-    "dq_interval_union_coverage",
-    "privacy_generalization_ladder",
-    "graph_katz_centrality_seeds",
-    "graph_harmonic_closeness_seeds",
-    "ml_brier_decomposition",
-    "stats_page_hinkley_orders",
-    "ml_auc_jackknife_ci",
-    "stats_ansari_bradley_quantity",
-    "graph_rich_club_coefficient",
-    "events_dau_mau_stickiness",
-    "text_sentence_length_profile",
-    "similarity_lsh_recall_audit",
-    "relational_skyline_pareto",
-    "stats_two_way_anova_price",
-    "ml_expected_calibration_error",
-    "ml_youden_optimal_threshold",
-    "events_retention_decay_fit",
-    "agg_top_value_share",
-    "sketch_kmv_intersection_users",
-    "layout_serpentine_shard_balance",
-    # round-9 new registrations (roundnine2.py)
-    "sketch_rank_sample_quantile_merge",
-    "graph_weighted_sssp_seeds",
-    "events_sequential_patterns_topk",
-    "stats_mann_kendall_daily",
-    "corpus_shard_skew_audit",
-    "ml_precision_at_k_by_lang",
-    "stats_jonckheere_terpstra_priority",
-    "stats_bartlett_variance_priority",
-    "stats_partial_correlation_price",
-    "stats_cronbach_alpha_gates",
-    "stats_gumbel_daily_max_fit",
-    "events_peak_over_threshold_clusters",
-    "text_heaps_law_fit",
-    "text_lang_vocab_jaccard",
-    "corpus_split_balance_kl",
-    "ml_uplift_by_engagement_tier",
-    "stats_anderson_darling_quantity",
-    "corpus_doclen_lognormal_fit",
-    "dq_candidate_key_discovery",
-    # round-9 second batch (roundten.py, activated same round)
-    "stats_page_trend_l",
-    "sketch_linear_counting_users",
-    "events_churn_hazard_by_tenure",
-    "dq_benford_second_digit_totals",
-    "multimodal_payload_dedup_manifest",
-    "stats_gamma_latency_fit_moments",
-]
-
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or "0.1")
     spark = get_spark("bench")
     specs = all_queries()
-
-    # Round-10 blind-spot closure (VERDICT r9 item 6): the explicit
-    # HEADLINE list preserves the historical ordering the delta report
-    # diffs against, and every registered query NOT in it is appended
-    # in sorted order — so the bench always covers the ENTIRE registry
-    # and a new registration can never silently escape canonical
-    # tracking again.
-    headline = HEADLINE + sorted(n for n in specs if n not in HEADLINE)
 
     # warm the JVM + parquet footers with one cheap query, and the
     # Python/Arrow UDF workers with a trivial pandas UDF (so per-query
@@ -338,7 +61,7 @@ def main() -> None:
     # "queries_cold" for transparency.
     timings: dict[str, float] = {}
     cold: dict[str, float] = {}
-    for name in headline:
+    for name in specs:
         # Inter-query hygiene (untimed): drop Python-side DataFrame refs
         # so the async ContextCleaner can release localCheckpoint blocks
         # and broadcasts between queries. Python gc only — a forced
@@ -368,17 +91,17 @@ def main() -> None:
     from mysql_public_data_ingestor_spark import warehouse
 
     timings["derivations"] = round(sum(warehouse.BUILD_SECONDS.values()), 3)
-    cold["derivations"] = timings["derivations"]
     total = round(sum(timings.values()), 3)
-    _report_deltas(timings, total, sf)
+    from mysql_public_data_ingestor_spark.session import default_parallelism
+
+    cpus = default_parallelism()
+    root = os.path.dirname(os.path.abspath(__file__))
+    _report_deltas(timings, total, load_history(root, sf, cpus))
     # The harness that records this run keeps only a bounded tail of
     # stdout; round 2's single line (50 warm + 50 cold timings, ~5 KB)
     # outgrew it and the headline number was lost. So: full per-query
     # detail goes to stderr AND a sidecar file; the FINAL stdout line is
     # a compact summary guaranteed to fit any reasonable tail buffer.
-    from mysql_public_data_ingestor_spark.session import default_parallelism
-
-    cpus = default_parallelism()
     detail = {
         "metric": "headline_query_wall_seconds_total",
         "value": total,
@@ -392,17 +115,8 @@ def main() -> None:
             k: round(v, 3) for k, v in warehouse.BUILD_SECONDS.items()
         },
     }
-    # The committed BENCH_DETAIL.json is the sf0.1 32-core warm-run
-    # history the delta report diffs against; a run at any other scale
-    # (e.g. a make_scale_fixture ×10 directory) or core count writes a
-    # per-sf/per-cpus sidecar instead of clobbering it with
-    # non-comparable numbers (VERDICT r14 item 5: the driver's 8-core
-    # run used to overwrite the 32-core sidecar).
-    stem = "BENCH_DETAIL" if sf == 0.1 else f"BENCH_DETAIL_sf{sf}"
-    sidecar = f"{stem}.json" if cpus == 32 else f"{stem}_c{cpus}.json"
-    detail_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), sidecar
-    )
+    sidecar = detail_sidecar(sf, cpus)
+    detail_path = os.path.join(root, sidecar)
     try:
         with open(detail_path, "w") as f:
             json.dump(detail, f, indent=1)
@@ -429,60 +143,37 @@ def main() -> None:
     )
 
 
-def _report_deltas(timings: dict[str, float], total: float, sf: float) -> None:
-    """Diff against the newest per-query record (same sf only) on stderr.
+def detail_sidecar(sf: float, cpus: int) -> str:
+    """File name of the per-query detail record for one scale and core
+    count. ``BENCH_DETAIL.json`` is the sf0.1 32-core history; any other
+    scale or core count gets its own file, so a run never overwrites or
+    diffs against numbers it cannot be compared with."""
+    stem = "BENCH_DETAIL" if sf == 0.1 else f"BENCH_DETAIL_sf{sf}"
+    return f"{stem}.json" if cpus == 32 else f"{stem}_c{cpus}.json"
 
-    Prefers the committed BENCH_DETAIL.json sidecar (full per-query
-    timings since round 3) and falls back to the newest BENCH_r*.json
-    for older rounds whose stdout line still carried the dict.
-    """
-    import glob
-    import re
 
-    root = os.path.dirname(os.path.abspath(__file__))
-    prev = None
-    src = None
-    # prefer the sidecar matching THIS run's scale (main() writes
-    # BENCH_DETAIL_sf{sf}.json for non-default scales) so scale-run
-    # regressions diff against same-sf history, not the sf0.1 file
-    sidecar = "BENCH_DETAIL.json" if sf == 0.1 else f"BENCH_DETAIL_sf{sf}.json"
-    detail_path = os.path.join(root, sidecar)
-    if not os.path.exists(detail_path):
-        detail_path = os.path.join(root, "BENCH_DETAIL.json")
-    if os.path.exists(detail_path):
-        try:
-            with open(detail_path) as f:
-                prev = json.load(f)
-            src = os.path.basename(detail_path)
-        except (OSError, json.JSONDecodeError):
-            prev = None
-    benches = sorted(
-        glob.glob(os.path.join(root, "BENCH_r*.json")),
-        key=lambda p: int(re.search(r"BENCH_r(\d+)", p).group(1)),
-    )
-    if prev is None:
-        if not benches:
-            return
-        try:
-            with open(benches[-1]) as f:
-                prev = json.load(f)
-            src = os.path.basename(benches[-1])
-        except (OSError, json.JSONDecodeError):
-            return
-    # driver files wrap the bench JSON line under "parsed"
-    if "parsed" in prev and isinstance(prev["parsed"], dict):
-        prev = {**prev["parsed"], "sf": prev.get("sf", prev["parsed"].get("sf"))}
-    if prev.get("sf") != sf:
-        print(f"[bench] no delta: previous round ran sf={prev.get('sf')}", file=sys.stderr)
+def load_history(root: str, sf: float, cpus: int) -> tuple[str, dict] | None:
+    """``(file name, record)`` of the previous run at this scale and core
+    count, or ``None`` when there is none (missing or unreadable file)."""
+    name = detail_sidecar(sf, cpus)
+    try:
+        with open(os.path.join(root, name)) as f:
+            return name, json.load(f)
+    except (OSError, json.JSONDecodeError):
+        return None
+
+
+def _report_deltas(
+    timings: dict[str, float], total: float, history: tuple[str, dict] | None
+) -> None:
+    """Diff per-query timings against ``history`` (see
+    :func:`load_history`) on stderr."""
+    if history is None:
+        print("[bench] no comparable history", file=sys.stderr)
         return
+    src, prev = history
     prev_q = prev.get("queries", {})
     print(f"[bench] vs {src}:", file=sys.stderr)
-    if prev.get("timing") != "min_of_2_runs":
-        print(
-            "[bench]   NOTE: previous round timed single (cold) runs; this round "
-            "reports min-of-2 (steady state) — deltas overstate improvement.",
-            file=sys.stderr,
-        )
     for name, t in timings.items():
         if name in prev_q and prev_q[name]:
             pct = 100.0 * (t - prev_q[name]) / prev_q[name]

@@ -119,3 +119,26 @@ def sql_round_big_int_ratio(num: str, den: str, dp: int = 6) -> str:
     s = 10**dp
     mag = f"(({2 * s}::HUGEINT*abs({num}) + ({den})) // (2::HUGEINT*({den})))"
     return f"CAST(CASE WHEN ({num}) < 0 THEN -{mag} ELSE {mag} END AS BIGINT) / {float(s)}"
+
+
+def dec38(c: Column) -> Column:
+    """Cast to decimal(38,0), the exact-integer domain of the
+    ``*_halfup_div`` and ``round_big_int_ratio`` helpers."""
+    return c.cast("decimal(38,0)")
+
+
+def halfup_div(num: Column, den: Column) -> Column:
+    """Half-up integer division of decimal columns (den > 0), re-signed
+    like :func:`round_big_int_ratio` but returning the INTEGER quotient
+    as decimal(38,0) (for further exact arithmetic, not display)."""
+    a = F.lit(2).cast("decimal(38,0)") * dec38(F.abs(num)) + dec38(den)
+    b = F.lit(2).cast("decimal(38,0)") * dec38(den)
+    mag = (a - a % b) / b
+    return dec38(F.when(num < 0, -mag).otherwise(mag))
+
+
+def sql_halfup_div(num: str, den: str) -> str:
+    """DuckDB twin of :func:`halfup_div` (HUGEINT ``//`` on the absolute
+    value, re-signed)."""
+    mag = f"((2::HUGEINT*abs({num}) + ({den})) // (2::HUGEINT*({den})))"
+    return f"(CASE WHEN ({num}) < 0 THEN -{mag} ELSE {mag} END)"

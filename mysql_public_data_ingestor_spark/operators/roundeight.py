@@ -20,12 +20,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.exact import dec38
 from ..registry import register
 from ..tables import Tables
-
-
-def _dec(c):
-    return c.cast("decimal(38,0)")
 
 
 # ---------------------------------------------------------------------------
@@ -579,13 +576,13 @@ def stats_cohens_d_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     a = c.agg(
         F.sum("g").cast("long").alias("n1"),
         (F.count(F.lit(1)) - F.sum("g")).cast("long").alias("n2"),
-        F.sum(F.when(F.col("g") == 1, _dec(F.col("cents"))).otherwise(zero)).alias("s1"),
-        F.sum(F.when(F.col("g") == 0, _dec(F.col("cents"))).otherwise(zero)).alias("s2"),
+        F.sum(F.when(F.col("g") == 1, dec38(F.col("cents"))).otherwise(zero)).alias("s1"),
+        F.sum(F.when(F.col("g") == 0, dec38(F.col("cents"))).otherwise(zero)).alias("s2"),
         F.sum(
-            F.when(F.col("g") == 1, _dec(F.col("cents")) * F.col("cents")).otherwise(zero)
+            F.when(F.col("g") == 1, dec38(F.col("cents")) * F.col("cents")).otherwise(zero)
         ).alias("ss1"),
         F.sum(
-            F.when(F.col("g") == 0, _dec(F.col("cents")) * F.col("cents")).otherwise(zero)
+            F.when(F.col("g") == 0, dec38(F.col("cents")) * F.col("cents")).otherwise(zero)
         ).alias("ss2"),
     )
     n1d, n2d = F.col("n1").cast("double"), F.col("n2").cast("double")
@@ -699,11 +696,11 @@ def stats_trimmed_winsorized_price(spark: SparkSession, sf_dir: str) -> DataFram
     a = r.withColumn("k", k).groupBy("n_name").agg(
         F.max("cnt").cast("long").alias("n"),
         F.max("k").cast("long").alias("k_trim"),
-        F.sum(_dec(F.col("cents"))).alias("sum_all"),
+        F.sum(dec38(F.col("cents"))).alias("sum_all"),
         F.sum(
             F.when(
                 (F.col("rn") > F.col("k")) & (F.col("rn") <= F.col("cnt") - F.col("k")),
-                _dec(F.col("cents")),
+                dec38(F.col("cents")),
             ).otherwise(zero)
         ).alias("sum_trim"),
         F.max(F.when(F.col("rn") == F.col("k") + 1, F.col("cents"))).alias("lo"),
@@ -723,8 +720,8 @@ def stats_trimmed_winsorized_price(spark: SparkSession, sf_dir: str) -> DataFram
         ).alias("trimmed_mean"),
         round_big_int_ratio(
             F.col("sum_trim")
-            + _dec(F.col("k_trim")) * F.col("lo")
-            + _dec(F.col("k_trim")) * F.col("hi"),
+            + dec38(F.col("k_trim")) * F.col("lo")
+            + dec38(F.col("k_trim")) * F.col("hi"),
             F.lit(100) * F.col("n"),
             4,
         ).alias("winsorized_mean"),
@@ -1123,18 +1120,18 @@ def events_hourly_entropy_profile(spark: SparkSession, sf_dir: str) -> DataFrame
     tot = ln_nh.groupBy("event_type").agg(
         F.sum("n_h").alias("n_events"),
         F.count(F.lit(1)).alias("n_active_hours"),
-        F.sum(_dec(F.col("n_h")) * F.col("ln_nh")).alias("s_nln"),
+        F.sum(dec38(F.col("n_h")) * F.col("ln_nh")).alias("s_nln"),
     )
     out = tot.withColumn("ln_n", det_ln_q(F.col("n_events"), 9))
-    num = _dec(F.col("n_events")) * F.col("ln_n") - F.col("s_nln")
+    num = dec38(F.col("n_events")) * F.col("ln_n") - F.col("s_nln")
     return out.select(
         "event_type",
         "n_events",
         "n_active_hours",
-        round_big_int_ratio(num, _dec(F.col("n_events")) * F.lit(1_000_000_000), 6).alias(
+        round_big_int_ratio(num, dec38(F.col("n_events")) * F.lit(1_000_000_000), 6).alias(
             "entropy_nats"
         ),
-        round_big_int_ratio(num, _dec(F.col("n_events")) * F.lit(_LN24_NANO), 6).alias(
+        round_big_int_ratio(num, dec38(F.col("n_events")) * F.lit(_LN24_NANO), 6).alias(
             "entropy_ratio"
         ),
     )
@@ -1214,7 +1211,7 @@ def stats_levene_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderpriority").alias("g"), cents.alias("cents")
     )
     gs = c.groupBy("g").agg(
-        F.count(F.lit(1)).alias("n_g"), F.sum(_dec(F.col("cents"))).alias("s_g")
+        F.count(F.lit(1)).alias("n_g"), F.sum(dec38(F.col("cents"))).alias("s_g")
     )
     z_q = F.floor(
         F.abs(
@@ -1227,8 +1224,8 @@ def stats_levene_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     z = c.join(F.broadcast(gs), "g").select("g", z_q.alias("z_q"))
     zg = z.groupBy("g").agg(
         F.count(F.lit(1)).alias("n_g"),
-        F.sum(_dec(F.col("z_q"))).alias("sz_g"),
-        F.sum(_dec(F.col("z_q")) * F.col("z_q")).alias("szz_g"),
+        F.sum(dec38(F.col("z_q"))).alias("sz_g"),
+        F.sum(dec38(F.col("z_q")) * F.col("z_q")).alias("szz_g"),
     )
 
     def _tdiv(num, den):
@@ -1239,7 +1236,7 @@ def stats_levene_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("k"),
         F.sum("n_g").cast("long").alias("n_total"),
         F.sum(F.col("sz_g")).alias("sz"),
-        F.sum(_tdiv(F.col("sz_g") * F.col("sz_g"), _dec(F.col("n_g")))).alias(
+        F.sum(_tdiv(F.col("sz_g") * F.col("sz_g"), dec38(F.col("n_g")))).alias(
             "bet_sum"
         ),
         F.sum(F.col("szz_g")).alias("szz"),
@@ -1247,7 +1244,7 @@ def stats_levene_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     kd = F.col("k").cast("double")
     within = (F.col("szz") - F.col("bet_sum")).cast("double")
     between = (
-        F.col("bet_sum") - _tdiv(F.col("sz") * F.col("sz"), _dec(F.col("n_total")))
+        F.col("bet_sum") - _tdiv(F.col("sz") * F.col("sz"), dec38(F.col("n_total")))
     ).cast("double")
     w_stat = ((F.col("n_total").cast("double") - kd) / (kd - F.lit(1.0))) * (
         between / within
@@ -1336,11 +1333,11 @@ def stats_cochran_q_gates(spark: SparkSession, sf_dir: str) -> DataFrame:
     num = F.lit(2).cast("decimal(38,0)") * (
         F.lit(3).cast("decimal(38,0)")
         * (
-            _dec(F.col("g_a")) * F.col("g_a")
-            + _dec(F.col("g_b")) * F.col("g_b")
-            + _dec(F.col("g_c")) * F.col("g_c")
+            dec38(F.col("g_a")) * F.col("g_a")
+            + dec38(F.col("g_b")) * F.col("g_b")
+            + dec38(F.col("g_c")) * F.col("g_c")
         )
-        - _dec(F.col("sl")) * F.col("sl")
+        - dec38(F.col("sl")) * F.col("sl")
     )
     den = F.lit(3) * F.col("sl") - F.col("sll")
     return agg.select(
@@ -1348,7 +1345,7 @@ def stats_cochran_q_gates(spark: SparkSession, sf_dir: str) -> DataFrame:
         "g_a",
         "g_b",
         "g_c",
-        F.when(den > 0, round_big_int_ratio(num, _dec(den))).alias("cochran_q"),
+        F.when(den > 0, round_big_int_ratio(num, dec38(den))).alias("cochran_q"),
     )
 
 
@@ -1419,10 +1416,10 @@ def ml_calibration_slope_intercept(spark: SparkSession, sf_dir: str) -> DataFram
     )
     a = sc.agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum(_dec(F.col("p_u"))).alias("sp"),
-        F.sum(_dec(F.col("p_u")) * F.col("p_u")).alias("spp"),
+        F.sum(dec38(F.col("p_u"))).alias("sp"),
+        F.sum(dec38(F.col("p_u")) * F.col("p_u")).alias("spp"),
         F.sum("yi").cast("long").alias("sy"),
-        F.sum(_dec(F.col("p_u") * F.col("yi"))).alias("spy"),
+        F.sum(dec38(F.col("p_u") * F.col("yi"))).alias("spy"),
     )
     nd = F.col("n").cast("double")
     spd = F.col("sp").cast("double")

@@ -23,12 +23,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.exact import dec38
 from ..registry import register
 from ..tables import Tables
-
-
-def _dec(c):
-    return c.cast("decimal(38,0)")
 
 
 # ---------------------------------------------------------------------------
@@ -131,7 +128,7 @@ def stats_kruskal_wallis_quantity(spark: SparkSession, sf_dir: str) -> DataFrame
         .groupBy("g")
         .agg(
             F.sum("cnt_g").alias("n_g"),
-            F.sum(_dec(F.col("cnt_g")) * (2 * F.col("cum") + F.col("cnt") + 1)).alias(
+            F.sum(dec38(F.col("cnt_g")) * (2 * F.col("cum") + F.col("cnt") + 1)).alias(
                 "r2_g"
             ),
         )
@@ -151,7 +148,7 @@ def stats_kruskal_wallis_quantity(spark: SparkSession, sf_dir: str) -> DataFrame
     terms = rg.join(F.broadcast(nt)).select("g", "n_g", term_u.alias("term_u"))
     s = terms.agg(F.count(F.lit(1)).alias("k"), F.sum("term_u").alias("sum_u"))
     tie = dv.agg(
-        F.sum(_dec(F.col("cnt")) * F.col("cnt") * F.col("cnt") - F.col("cnt")).alias(
+        F.sum(dec38(F.col("cnt")) * F.col("cnt") * F.col("cnt") - F.col("cnt")).alias(
             "tie3"
         )
     )
@@ -383,20 +380,20 @@ def stats_mutual_info_priority_segment(spark: SparkSession, sf_dir: str) -> Data
         .join(F.broadcast(ns))
         .agg(
             F.sum(
-                _dec(F.col("n_xy"))
+                dec38(F.col("n_xy"))
                 * (F.col("ln_n") + F.col("ln_xy") - F.col("ln_x") - F.col("ln_y"))
             ).alias("mi_num"),
             F.max("n").alias("n"),
             F.max("ln_n").alias("ln_n"),
         )
     )
-    hx = xs.agg(F.sum(_dec(F.col("n_x")) * F.col("ln_x")).alias("s_x"))
-    hy = ys.agg(F.sum(_dec(F.col("n_y")) * F.col("ln_y")).alias("s_y"))
+    hx = xs.agg(F.sum(dec38(F.col("n_x")) * F.col("ln_x")).alias("s_x"))
+    hy = ys.agg(F.sum(dec38(F.col("n_y")) * F.col("ln_y")).alias("s_y"))
     out = mi.join(F.broadcast(hx)).join(F.broadcast(hy))
-    n_dec = _dec(F.col("n"))
+    n_dec = dec38(F.col("n"))
     nano = n_dec * F.lit(1_000_000_000)
-    hx_num = _dec(F.col("ln_n")) * F.col("n") - F.col("s_x")
-    hy_num = _dec(F.col("ln_n")) * F.col("n") - F.col("s_y")
+    hx_num = dec38(F.col("ln_n")) * F.col("n") - F.col("s_x")
+    hy_num = dec38(F.col("ln_n")) * F.col("n") - F.col("s_y")
     return out.select(
         "n",
         round_big_int_ratio(F.col("mi_num"), nano, 6).alias("mi_nats"),
@@ -842,12 +839,12 @@ def stats_weibull_latency_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     sums = pts.agg(
         F.max("n").alias("n"),
         F.count(F.lit(1)).alias("n_pts"),
-        F.sum(_dec(F.col("ln_v"))).alias("sx"),
-        F.sum(_dec(F.col("y_n"))).alias("sy"),
-        F.sum(_dec(F.col("ln_v")) * F.col("y_n")).alias("sxy"),
-        F.sum(_dec(F.col("ln_v")) * F.col("ln_v")).alias("sxx"),
+        F.sum(dec38(F.col("ln_v"))).alias("sx"),
+        F.sum(dec38(F.col("y_n"))).alias("sy"),
+        F.sum(dec38(F.col("ln_v")) * F.col("y_n")).alias("sxy"),
+        F.sum(dec38(F.col("ln_v")) * F.col("ln_v")).alias("sxx"),
     )
-    np_dec = _dec(F.col("n_pts"))
+    np_dec = dec38(F.col("n_pts"))
     shape = (np_dec * F.col("sxy") - F.col("sx") * F.col("sy")).cast("double") / (
         np_dec * F.col("sxx") - F.col("sx") * F.col("sx")
     ).cast("double")
@@ -954,7 +951,7 @@ def events_seasonal_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
     tot = cells.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("c"),
         F.sum("n_dh").alias("t1"),
-        F.sum(_dec(F.col("n_dh")) * F.col("n_dh")).alias("t2"),
+        F.sum(dec38(F.col("n_dh")) * F.col("n_dh")).alias("t2"),
     )
     j = tot.join(hsum, "event_type")
     t1d = F.col("t1").cast("double")
@@ -1040,8 +1037,8 @@ def stats_grubbs_acctbal_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     g1 = sup.groupBy("s_nationkey").agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum(_dec(F.col("cents"))).alias("s"),
-        F.sum(_dec(F.col("cents")) * F.col("cents")).alias("ss"),
+        F.sum(dec38(F.col("cents"))).alias("s"),
+        F.sum(dec38(F.col("cents")) * F.col("cents")).alias("ss"),
     )
     devs = sup.join(F.broadcast(g1), "s_nationkey").filter(
         F.col("n") >= GRUBBS_MIN_N
@@ -1050,7 +1047,7 @@ def stats_grubbs_acctbal_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n",
         "s",
         "ss",
-        F.abs(_dec(F.col("cents")) * F.col("n") - F.col("s")).alias("dev"),
+        F.abs(dec38(F.col("cents")) * F.col("n") - F.col("s")).alias("dev"),
     )
     mx = devs.groupBy("s_nationkey").agg(
         F.max("n").alias("n"),
@@ -1060,7 +1057,7 @@ def stats_grubbs_acctbal_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     n_d = F.col("n").cast("double")
     mdev = F.col("maxdev").cast("double") / F.col("n")
-    var = (_dec(F.col("n")) * F.col("ss") - F.col("s") * F.col("s")).cast("double") / (
+    var = (dec38(F.col("n")) * F.col("ss") - F.col("s") * F.col("s")).cast("double") / (
         n_d * F.col("n") * (F.col("n") - 1)
     )
     out = mx.join(
@@ -1148,7 +1145,7 @@ def stats_negbin_hourly_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     m = cells.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("c"),
         F.sum("n_dh").alias("t1"),
-        F.sum(_dec(F.col("n_dh")) * F.col("n_dh")).alias("t2"),
+        F.sum(dec38(F.col("n_dh")) * F.col("n_dh")).alias("t2"),
     ).filter(F.col("c") >= 2)
     mean_c = F.col("t1").cast("double") / F.col("c")
     var_c = (
@@ -1260,13 +1257,13 @@ def text_vocab_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("tf", "n_toks")
         .agg(
             F.coalesce(F.sum("n_hi"), F.lit(0)).alias("n_above"),
-            F.coalesce(F.sum(_dec(F.col("n_hi")) * F.col("tf_hi")), _dec(F.lit(0))).alias(
+            F.coalesce(F.sum(dec38(F.col("n_hi")) * F.col("tf_hi")), dec38(F.lit(0))).alias(
                 "mass_above"
             ),
         )
     )
     tot = coc.agg(
-        F.sum(_dec(F.col("n_toks")) * F.col("tf")).alias("total_mass"),
+        F.sum(dec38(F.col("n_toks")) * F.col("tf")).alias("total_mass"),
         F.sum("n_toks").alias("vocab_size"),
     )
     ks = spark.range(len(COVERAGE_KS)).select(
@@ -1286,7 +1283,7 @@ def text_vocab_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         "k",
         (
             F.col("mass_above")
-            + _dec(F.least(F.col("k") - F.col("n_above"), F.col("n_toks"))) * F.col("f_k")
+            + dec38(F.least(F.col("k") - F.col("n_above"), F.col("n_toks"))) * F.col("f_k")
         ).alias("covered"),
     )
     out = cov.join(F.broadcast(tot))
@@ -1371,7 +1368,7 @@ def stats_friedman_nation_priority(spark: SparkSession, sf_dir: str) -> DataFram
             "o_custkey",
         )
         .groupBy("blk", "trt")
-        .agg(F.count(F.lit(1)).alias("n_cell"), F.sum(_dec(F.col("cents"))).alias("s_cell"))
+        .agg(F.count(F.lit(1)).alias("n_cell"), F.sum(dec38(F.col("cents"))).alias("s_cell"))
     )
     kk = cells.agg(F.countDistinct("trt").alias("k"))
     complete = (
@@ -1389,7 +1386,7 @@ def stats_friedman_nation_priority(spark: SparkSession, sf_dir: str) -> DataFram
     )
     rj = ranked.groupBy("trt").agg(F.sum("rnk").alias("r_j"))
     s = rj.agg(
-        F.count(F.lit(1)).alias("k"), F.sum(_dec(F.col("r_j")) * F.col("r_j")).alias("sr2")
+        F.count(F.lit(1)).alias("k"), F.sum(dec38(F.col("r_j")) * F.col("r_j")).alias("sr2")
     )
     c = complete.agg(F.count(F.lit(1)).alias("n_blocks"))
     j = s.join(F.broadcast(c))
@@ -1667,8 +1664,8 @@ def stats_theil_index_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("c_nationkey")
         .agg(
             F.sum("cnt").alias("n_cust"),
-            F.sum(_dec(F.col("cnt")) * F.col("cents")).alias("s"),
-            F.sum(_dec(F.col("cnt")) * F.col("cents") * F.col("ln_x")).alias("xlnx"),
+            F.sum(dec38(F.col("cnt")) * F.col("cents")).alias("s"),
+            F.sum(dec38(F.col("cnt")) * F.col("cents") * F.col("ln_x")).alias("xlnx"),
         )
     )
     pn = pn.withColumn("ln_s", det_ln_q(F.col("s"), 9)).withColumn(
@@ -1937,19 +1934,19 @@ def stats_ols_influence_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = (
         t.orders.select(F.to_date("o_orderdate").alias("d"), cents.alias("cents"))
         .groupBy("d")
-        .agg(F.count(F.lit(1)).alias("n_orders"), F.sum(_dec(F.col("cents"))).alias("y"))
+        .agg(F.count(F.lit(1)).alias("n_orders"), F.sum(dec38(F.col("cents"))).alias("y"))
     )
     dx = daily.withColumn(
         "x", F.datediff(F.col("d"), F.to_date(F.lit("1992-01-01"))).cast("long")
     )
     s = dx.agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum(_dec(F.col("x"))).alias("sx"),
+        F.sum(dec38(F.col("x"))).alias("sx"),
         F.sum("y").alias("sy"),
-        F.sum(_dec(F.col("x")) * F.col("y")).alias("sxy"),
-        F.sum(_dec(F.col("x")) * F.col("x")).alias("sxx"),
+        F.sum(dec38(F.col("x")) * F.col("y")).alias("sxy"),
+        F.sum(dec38(F.col("x")) * F.col("x")).alias("sxx"),
     )
-    n_dec = _dec(F.col("n"))
+    n_dec = dec38(F.col("n"))
     b = (n_dec * F.col("sxy") - F.col("sx") * F.col("sy")).cast("double") / (
         n_dec * F.col("sxx") - F.col("sx") * F.col("sx")
     ).cast("double")
@@ -1975,7 +1972,7 @@ def stats_ols_influence_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).cast("long")
         ).alias("r_q"),
     )
-    sse = res.agg(F.sum(_dec(F.col("r_q")) * F.col("r_q")).alias("sse2"))
+    sse = res.agg(F.sum(dec38(F.col("r_q")) * F.col("r_q")).alias("sse2"))
     xdev = F.col("x").cast("double") - F.col("sx").cast("double") / F.col("n")
     diag = res.join(F.broadcast(sse)).select(
         "d",
@@ -2163,7 +2160,7 @@ def stats_moments_skew_kurtosis(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderpriority").alias("g"),
         F.floor(F.col("o_totalprice")).cast("long").alias("x"),
     )
-    xd = _dec(F.col("x"))
+    xd = dec38(F.col("x"))
     s = c.groupBy("g").agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(xd).alias("s1"),
@@ -2275,10 +2272,10 @@ def sketch_kmv_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     topk = h.orderBy("hv").limit(KMV_K)
     kth = topk.agg(F.max("hv").alias("h_k"), F.count(F.lit(1)).alias("k_eff"))
     tru = t.events.agg(F.countDistinct("user_id").alias("d_true"))
-    est_num = _dec(F.lit(KMV_K - 1)) * F.lit(KMV_DOMAIN)
+    est_num = dec38(F.lit(KMV_K - 1)) * F.lit(KMV_DOMAIN)
     est = F.when(
         F.col("k_eff") == KMV_K,
-        ((est_num - est_num % _dec(F.col("h_k"))) / _dec(F.col("h_k"))).cast("long"),
+        ((est_num - est_num % dec38(F.col("h_k"))) / dec38(F.col("h_k"))).cast("long"),
     ).otherwise(F.col("k_eff"))
     out = kth.join(F.broadcast(tru))
     return out.select(

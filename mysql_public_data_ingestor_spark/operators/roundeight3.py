@@ -26,12 +26,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.exact import dec38
 from ..registry import register
 from ..tables import Tables
-
-
-def _dec(c):
-    return c.cast("decimal(38,0)")
 
 
 # ---------------------------------------------------------------------------
@@ -317,7 +314,7 @@ def stats_cliffs_delta_discount(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_lt",
         "n_eq",
         round_big_int_ratio(
-            F.col("n_gt") - F.col("n_lt"), _dec(F.col("nx")) * _dec(F.col("ny"))
+            F.col("n_gt") - F.col("n_lt"), dec38(F.col("nx")) * dec38(F.col("ny"))
         ).alias("cliffs_delta"),
     )
 
@@ -405,18 +402,18 @@ def stats_pythagorean_means_quantity(spark: SparkSession, sf_dir: str) -> DataFr
     s = terms.groupBy("g").agg(
         F.sum("c").alias("n"),
         F.sum(F.col("c") * F.col("v")).alias("sum_v"),
-        F.sum(_dec(F.col("c")) * F.col("lnv")).alias("sum_lnq"),
-        F.sum(_dec(F.col("c")) * F.col("recip_u")).alias("sum_recip"),
+        F.sum(dec38(F.col("c")) * F.col("lnv")).alias("sum_lnq"),
+        F.sum(dec38(F.col("c")) * F.col("recip_u")).alias("sum_recip"),
     )
     return s.select(
         F.col("g").alias("return_flag"),
         "n",
         round_int_ratio(F.col("sum_v"), F.col("n")).alias("arith_mean"),
         round_big_int_ratio(
-            F.col("sum_lnq"), _dec(F.col("n")) * F.lit(10**9), 9
+            F.col("sum_lnq"), dec38(F.col("n")) * F.lit(10**9), 9
         ).alias("ln_geom_mean"),
         round_big_int_ratio(
-            _dec(F.col("n")) * F.lit(HM_RECIP_SCALE), F.col("sum_recip")
+            dec38(F.col("n")) * F.lit(HM_RECIP_SCALE), F.col("sum_recip")
         ).alias("harmonic_mean"),
     )
 
@@ -889,18 +886,18 @@ def stats_logrank_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.when(F.col("flag") == LOGRANK_G1, F.col("at_risk")).otherwise(0)).alias("n1"),
     )
     kept = ev.filter((F.col("d_tot") > 0) & (F.col("n") > F.col("d_tot")) & (F.col("n") > 1))
-    e_num = _dec(F.col("d_tot")) * F.col("n1") * F.lit(10**9)
-    e_den = _dec(F.col("n"))
+    e_num = dec38(F.col("d_tot")) * F.col("n1") * F.lit(10**9)
+    e_den = dec38(F.col("n"))
     e_a = F.lit(2).cast("decimal(38,0)") * e_num + e_den
     e_b = F.lit(2).cast("decimal(38,0)") * e_den
     v_num = (
-        _dec(F.col("d_tot"))
+        dec38(F.col("d_tot"))
         * F.col("n1")
         * (F.col("n") - F.col("n1"))
         * (F.col("n") - F.col("d_tot"))
         * F.lit(10**9)
     )
-    v_den = _dec(F.col("n")) * F.col("n") * (F.col("n") - 1)
+    v_den = dec38(F.col("n")) * F.col("n") * (F.col("n") - 1)
     v_a = F.lit(2).cast("decimal(38,0)") * v_num + v_den
     v_b = F.lit(2).cast("decimal(38,0)") * v_den
     terms = kept.select(
@@ -1056,14 +1053,14 @@ def stats_ljung_box_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     w_k = Window.orderBy("k").rowsBetween(Window.unboundedPreceding, 0)
     cum = terms.select(
-        "k", "n", "rho_u", F.sum(_dec(F.col("term_u"))).over(w_k).alias("cum_term")
+        "k", "n", "rho_u", F.sum(dec38(F.col("term_u"))).over(w_k).alias("cum_term")
     )
     return cum.select(
         F.col("k").alias("lag"),
         F.col("n").alias("n_days"),
         (F.col("rho_u").cast("double") / F.lit(1e9)).alias("rho"),
         round_big_int_ratio(
-            _dec(F.col("n")) * (F.col("n") + 2) * F.col("cum_term"),
+            dec38(F.col("n")) * (F.col("n") + 2) * F.col("cum_term"),
             F.lit(10**18).cast("decimal(38,0)"),
         ).alias("q_ljung_box"),
     ).orderBy("lag")
@@ -1128,9 +1125,9 @@ def text_simpson_diversity_by_lang(spark: SparkSession, sf_dir: str) -> DataFram
     s = tc.groupBy("lang").agg(
         F.sum("c").alias("n_tokens"),
         F.count(F.lit(1)).alias("distinct_tokens"),
-        F.sum(_dec(F.col("c")) * (F.col("c") - 1)).alias("d2"),
+        F.sum(dec38(F.col("c")) * (F.col("c") - 1)).alias("d2"),
     )
-    pair_den = _dec(F.col("n_tokens")) * (F.col("n_tokens") - 1)
+    pair_den = dec38(F.col("n_tokens")) * (F.col("n_tokens") - 1)
     return s.filter((F.col("n_tokens") >= 2) & (F.col("d2") > 0)).select(
         "lang",
         "n_tokens",

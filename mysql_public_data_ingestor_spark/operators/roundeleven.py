@@ -1,14 +1,8 @@
-"""Round-11 banked operator queue — built AND gated in round 10, to be
-activated when the round-11 driver window opens (VERDICT r9 item 7:
-the bank commit and its gate evidence land together or not at all;
-``tests/test_roundeleven.py`` carries raw-frame oracle parity, plan
-sweeps and Python replicas, and SCALE.md §5i.11 records the fuzz /
-sf0.1 / ×10 ladder from THIS round's session).
+"""Round-11 operator batch.
 
-NOT imported by ``registry._ensure_loaded`` yet — the round-10 driver
-window is exactly full at 50, so registering these now would strand
-their evidence outside the window. ``activate()`` is the round-11
-switch.
+Gates: raw-frame oracle parity, plan sweeps and Python replicas in
+``tests/test_roundeleven.py``; SCALE.md §5i.11 records the fuzz /
+sf0.1 / ×10 ladder.
 
 Batch theme — model-fitting and set-algebra completions: discrete Bass
 diffusion fit (3-var Cramer OLS), a Granger-style lag-regression
@@ -24,51 +18,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.exact import dec38, halfup_div, sql_halfup_div
+from ..registry import register
 from ..tables import Tables
-
-QUEUE: list[tuple] = []
-
-
-def _queued(name: str, oracle: str):
-    def deco(fn):
-        QUEUE.append((name, fn, oracle, fn.__doc__ or ""))
-        return fn
-
-    return deco
-
-
-_ACTIVATED = False
-
-
-def activate() -> None:
-    """Register every queued query (round-11 switch; idempotent)."""
-    global _ACTIVATED
-    if _ACTIVATED:
-        return
-    from ..registry import register
-
-    for name, fn, oracle, doc in QUEUE:
-        register(name, oracle=oracle, doc=doc)(fn)
-    _ACTIVATED = True
-
-
-def _dec(c):
-    return c.cast("decimal(38,0)")
-
-
-def _halfup_div(num, den):
-    """Half-up integer division of decimal columns (den > 0), re-signed;
-    returns the integer quotient as decimal(38,0). Twin of the HUGEINT
-    CASE idiom in the oracles (shared shape with roundten3)."""
-    a = F.lit(2).cast("decimal(38,0)") * _dec(F.abs(num)) + _dec(den)
-    b = F.lit(2).cast("decimal(38,0)") * _dec(den)
-    mag = (a - a % b) / b
-    return _dec(F.when(num < 0, -mag).otherwise(mag))
-
-
-def _sql_halfup_div(num: str, den: str) -> str:
-    mag = f"((2::HUGEINT*abs({num}) + ({den})) // (2::HUGEINT*({den})))"
-    return f"(CASE WHEN ({num}) < 0 THEN -{mag} ELSE {mag} END)"
 
 
 # ---------------------------------------------------------------------------
@@ -127,7 +79,7 @@ def _bass_oracle() -> str:
     """
 
 
-@_queued("events_bass_diffusion_fit", _bass_oracle())
+@register("events_bass_diffusion_fit", _bass_oracle())
 def events_bass_diffusion_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Discrete Bass diffusion fit of daily signups: regress new
     adopters S_t on cumulative prior adoption N_{t−1} and N_{t−1}² —
@@ -177,15 +129,15 @@ def events_bass_diffusion_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("s").alias("y"), x1.alias("x1")
     ).withColumn("x2", F.col("x1") * F.col("x1"))
     m = xy.agg(
-        _dec(F.count(F.lit(1))).alias("n"),
-        _dec(F.sum("x1")).alias("s1"),
-        _dec(F.sum("x2")).alias("s2"),
-        F.sum(_dec(F.col("x1")) * _dec(F.col("x1"))).alias("s11"),
-        F.sum(_dec(F.col("x1")) * _dec(F.col("x2"))).alias("s12"),
-        F.sum(_dec(F.col("x2")) * _dec(F.col("x2"))).alias("s22"),
-        _dec(F.sum("y")).alias("sy"),
-        F.sum(_dec(F.col("x1")) * _dec(F.col("y"))).alias("sy1"),
-        F.sum(_dec(F.col("x2")) * _dec(F.col("y"))).alias("sy2"),
+        dec38(F.count(F.lit(1))).alias("n"),
+        dec38(F.sum("x1")).alias("s1"),
+        dec38(F.sum("x2")).alias("s2"),
+        F.sum(dec38(F.col("x1")) * dec38(F.col("x1"))).alias("s11"),
+        F.sum(dec38(F.col("x1")) * dec38(F.col("x2"))).alias("s12"),
+        F.sum(dec38(F.col("x2")) * dec38(F.col("x2"))).alias("s22"),
+        dec38(F.sum("y")).alias("sy"),
+        F.sum(dec38(F.col("x1")) * dec38(F.col("y"))).alias("sy1"),
+        F.sum(dec38(F.col("x2")) * dec38(F.col("y"))).alias("sy2"),
     )
     n, s1, s2 = F.col("n"), F.col("s1"), F.col("s2")
     s11, s12, s22 = F.col("s11"), F.col("s12"), F.col("s22")
@@ -297,7 +249,7 @@ def _granger_oracle() -> str:
     """
 
 
-@_queued("events_granger_lag1_test", _granger_oracle())
+@register("events_granger_lag1_test", _granger_oracle())
 def events_granger_lag1_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Granger-style lag-1 predictability comparison: does yesterday's
     VIEW count improve the prediction of today's PURCHASE count beyond
@@ -357,16 +309,16 @@ def events_granger_lag1_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("ya").alias("y"), "x1", "x2"
     )
     m = rows.agg(
-        _dec(F.count(F.lit(1))).alias("n"),
-        _dec(F.sum("x1")).alias("s1"),
-        _dec(F.sum("x2")).alias("s2"),
-        F.sum(_dec(F.col("x1")) * _dec(F.col("x1"))).alias("s11"),
-        F.sum(_dec(F.col("x1")) * _dec(F.col("x2"))).alias("s12"),
-        F.sum(_dec(F.col("x2")) * _dec(F.col("x2"))).alias("s22"),
-        _dec(F.sum("y")).alias("sy"),
-        F.sum(_dec(F.col("x1")) * _dec(F.col("y"))).alias("sy1"),
-        F.sum(_dec(F.col("x2")) * _dec(F.col("y"))).alias("sy2"),
-        F.sum(_dec(F.col("y")) * _dec(F.col("y"))).alias("syy"),
+        dec38(F.count(F.lit(1))).alias("n"),
+        dec38(F.sum("x1")).alias("s1"),
+        dec38(F.sum("x2")).alias("s2"),
+        F.sum(dec38(F.col("x1")) * dec38(F.col("x1"))).alias("s11"),
+        F.sum(dec38(F.col("x1")) * dec38(F.col("x2"))).alias("s12"),
+        F.sum(dec38(F.col("x2")) * dec38(F.col("x2"))).alias("s22"),
+        dec38(F.sum("y")).alias("sy"),
+        F.sum(dec38(F.col("x1")) * dec38(F.col("y"))).alias("sy1"),
+        F.sum(dec38(F.col("x2")) * dec38(F.col("y"))).alias("sy2"),
+        F.sum(dec38(F.col("y")) * dec38(F.col("y"))).alias("syy"),
     )
     n, s1, s2 = F.col("n"), F.col("s1"), F.col("s2")
     s11, s12, s22 = F.col("s11"), F.col("s12"), F.col("s22")
@@ -448,8 +400,8 @@ def _tukey_oracle() -> str:
       FROM jn GROUP BY g
     ), gq AS (
       SELECT g, n, s,
-             {_sql_halfup_div('10000::HUGEINT * s', 'n')} AS mq,
-             {_sql_halfup_div('10000::HUGEINT * (n * qq - s * s)', 'n')} AS sswq
+             {sql_halfup_div('10000::HUGEINT * s', 'n')} AS mq,
+             {sql_halfup_div('10000::HUGEINT * (n * qq - s * s)', 'n')} AS sswq
       FROM grp
     ), tot AS (
       SELECT CAST(sum(n) AS HUGEINT) AS nn,
@@ -475,7 +427,7 @@ def _tukey_oracle() -> str:
     """
 
 
-@_queued("stats_tukey_hsd_priority", _tukey_oracle())
+@register("stats_tukey_hsd_priority", _tukey_oracle())
 def stats_tukey_hsd_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tukey HSD post-hoc pairwise comparisons of mean l_quantity
     across the five order priorities: the studentized-range statistic
@@ -505,23 +457,23 @@ def stats_tukey_hsd_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_quantity").cast("long").alias("q"),
     )
     grp = jn.groupBy("g").agg(
-        _dec(F.count(F.lit(1))).alias("n"),
-        _dec(F.sum("q")).alias("s"),
-        _dec(F.sum(F.col("q") * F.col("q"))).alias("qq"),
+        dec38(F.count(F.lit(1))).alias("n"),
+        dec38(F.sum("q")).alias("s"),
+        dec38(F.sum(F.col("q") * F.col("q"))).alias("qq"),
     )
     ten4 = F.lit(10000).cast("decimal(38,0)")
     gq = grp.select(
         "g",
         "n",
-        _halfup_div(ten4 * F.col("s"), F.col("n")).alias("mq"),
-        _halfup_div(
+        halfup_div(ten4 * F.col("s"), F.col("n")).alias("mq"),
+        halfup_div(
             ten4 * (F.col("n") * F.col("qq") - F.col("s") * F.col("s")),
             F.col("n"),
         ).alias("sswq"),
     )
     tot = gq.agg(
         F.sum("n").alias("nn"),
-        _dec(F.count(F.lit(1))).alias("kk"),
+        dec38(F.count(F.lit(1))).alias("kk"),
         F.sum("sswq").alias("ssw"),
     )
     a = gq.select(
@@ -599,13 +551,13 @@ def _ngram_entropy_oracle() -> str:
     ), witht AS (SELECT *, total AS arg_t FROM per_n),
     {sql_det_ln_steps('witht', 'arg_t', 'lt')}
     SELECT CAST(n AS BIGINT) AS ngram_n, total AS n_grams, vocab,
-           {_sql_halfup_div('(total * lt - clc)', 'total')} / 1000000.0
+           {sql_halfup_div('(total * lt - clc)', 'total')} / 1000000.0
              AS entropy_nats
     FROM lt_rel
     """
 
 
-@_queued("text_ngram_entropy_curve", _ngram_entropy_oracle())
+@register("text_ngram_entropy_curve", _ngram_entropy_oracle())
 def text_ngram_entropy_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shannon entropy of the corpus token n-gram distribution for
     n = 1, 2, 3 — the redundancy curve: H2 - H1 and H3 - H2 bound the
@@ -667,7 +619,7 @@ def text_ngram_entropy_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("total").alias("n_grams"),
         "vocab",
         (
-            _halfup_div(
+            halfup_div(
                 F.col("total") * det_ln_q(F.col("total")) - F.col("clc"),
                 F.col("total"),
             ).cast("long")
@@ -729,7 +681,7 @@ def _kmv_union_oracle() -> str:
     """
 
 
-@_queued("sketch_kmv_union_users", _kmv_union_oracle())
+@register("sketch_kmv_union_users", _kmv_union_oracle())
 def sketch_kmv_union_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """KMV/theta set-UNION estimate |heavy viewers UNION heavy
     purchasers| (>= 10 events of the type) — the member completing the
@@ -767,11 +719,11 @@ def sketch_kmv_union_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     bottom = ska.unionAll(skb).distinct().orderBy("hv").limit(k)
     kth = bottom.agg(F.max("hv").alias("theta"), F.count(F.lit(1)).alias("k_eff"))
     tru = members.agg(F.count(F.lit(1)).alias("d_true"))
-    est_num = _dec(F.lit(k - 1)) * F.lit(dom)
+    est_num = dec38(F.lit(k - 1)) * F.lit(dom)
     est = F.when(
         F.col("k_eff") == k,
         (
-            (est_num - est_num % _dec(F.col("theta"))) / _dec(F.col("theta"))
+            (est_num - est_num % dec38(F.col("theta"))) / dec38(F.col("theta"))
         ).cast("long"),
     ).otherwise(F.col("k_eff"))
     return kth.join(F.broadcast(tru)).select(
@@ -826,7 +778,7 @@ def _degree_gini_oracle() -> str:
     )
 
 
-@_queued("graph_degree_gini", _degree_gini_oracle())
+@register("graph_degree_gini", _degree_gini_oracle())
 def graph_degree_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gini coefficient of the co-purchase degree distribution — the
     hub-concentration scalar beside the degree histogram and the
@@ -860,13 +812,13 @@ def graph_degree_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.coalesce(F.sum("m_b"), F.lit(0)).alias("r"))
     )
     agg = cum.agg(
-        _dec(F.sum("m")).alias("n"),
-        F.sum(_dec(F.col("d")) * _dec(F.col("m"))).alias("sx"),
+        dec38(F.sum("m")).alias("n"),
+        F.sum(dec38(F.col("d")) * dec38(F.col("m"))).alias("sx"),
         F.sum(
-            _dec(F.col("d"))
+            dec38(F.col("d"))
             * (
-                F.lit(2).cast("decimal(38,0)") * _dec(F.col("m")) * _dec(F.col("r"))
-                + _dec(F.col("m")) * (_dec(F.col("m")) + F.lit(1).cast("decimal(38,0)"))
+                F.lit(2).cast("decimal(38,0)") * dec38(F.col("m")) * dec38(F.col("r"))
+                + dec38(F.col("m")) * (dec38(F.col("m")) + F.lit(1).cast("decimal(38,0)"))
             )
         ).alias("two_ri"),
     )
@@ -944,7 +896,7 @@ def _expmech_oracle() -> str:
     """
 
 
-@_queued("privacy_exponential_mechanism_segment", _expmech_oracle())
+@register("privacy_exponential_mechanism_segment", _expmech_oracle())
 def privacy_exponential_mechanism_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exponential-mechanism differentially-private release of the
     most common market segment per nation (eps = 0.5, sensitivity 1):
@@ -1072,7 +1024,7 @@ def _digit_pref_oracle() -> str:
     """
 
 
-@_queued("dq_digit_preference_audit", _digit_pref_oracle())
+@register("dq_digit_preference_audit", _digit_pref_oracle())
 def dq_digit_preference_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Last-digit preference audit of order totals (in cents): the
     terminal-digit histogram with the chi-square index of digit
@@ -1098,8 +1050,8 @@ def dq_digit_preference_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     tot = cnt.agg(F.sum("c").alias("n"))
     chi = cnt.crossJoin(F.broadcast(tot)).agg(
         F.sum(
-            _dec(F.lit(10) * F.col("c") - F.col("n"))
-            * _dec(F.lit(10) * F.col("c") - F.col("n"))
+            dec38(F.lit(10) * F.col("c") - F.col("n"))
+            * dec38(F.lit(10) * F.col("c") - F.col("n"))
         ).alias("num"),
         F.max("n").alias("n"),
     )
@@ -1109,7 +1061,7 @@ def dq_digit_preference_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         round_int_ratio(F.col("c"), F.col("n")).alias("share"),
         round_big_int_ratio(
             F.col("num"),
-            F.lit(10).cast("decimal(38,0)") * _dec(F.col("n")) * _dec(F.col("n")),
+            F.lit(10).cast("decimal(38,0)") * dec38(F.col("n")) * dec38(F.col("n")),
         ).alias("chi2_over_n"),
     )
 
@@ -1174,7 +1126,7 @@ def _pgram_oracle() -> str:
     """
 
 
-@_queued("events_periodogram_fixed_periods", _pgram_oracle())
+@register("events_periodogram_fixed_periods", _pgram_oracle())
 def events_periodogram_fixed_periods(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Coarse periodogram of the daily order-count series at fixed
     calendar periods (weekly / monthly / quarterly): the share of
@@ -1210,8 +1162,8 @@ def events_periodogram_fixed_periods(spark: SparkSession, sf_dir: str) -> DataFr
         "k", "n", (F.col("n") * F.col("y") - F.col("s")).alias("z")
     )
     zz = cent.agg(
-        F.sum(_dec(F.col("z")) * _dec(F.col("z"))).alias("zyy"),
-        _dec(F.max("n")).alias("n"),
+        F.sum(dec38(F.col("z")) * dec38(F.col("z"))).alias("zyy"),
+        dec38(F.max("n")).alias("n"),
     )
     vec_frames = []
     for p in PGRAM_PERIODS:
@@ -1221,8 +1173,8 @@ def events_periodogram_fixed_periods(spark: SparkSession, sf_dir: str) -> DataFr
         vec_frames.append(
             cent.agg(
                 F.lit(p).cast("long").alias("period"),
-                F.sum(_dec(F.col("z") * F.element_at(cos_arr, ph))).alias("sc"),
-                F.sum(_dec(F.col("z") * F.element_at(sin_arr, ph))).alias("ss"),
+                F.sum(dec38(F.col("z") * F.element_at(cos_arr, ph))).alias("sc"),
+                F.sum(dec38(F.col("z") * F.element_at(sin_arr, ph))).alias("ss"),
             )
         )
     vecs = vec_frames[0]
@@ -1280,7 +1232,7 @@ def _sign_test_oracle() -> str:
     """
 
 
-@_queued("stats_sign_test_daily_pair", _sign_test_oracle())
+@register("stats_sign_test_daily_pair", _sign_test_oracle())
 def stats_sign_test_daily_pair(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Paired sign test of the daily view vs purchase counts: on each
     calendar day the pair (views, purchases) gives one sign; under
@@ -1330,7 +1282,7 @@ def stats_sign_test_daily_pair(spark: SparkSession, sf_dir: str) -> DataFrame:
         "b_plus",
         F.when(
             F.col("m") > 0,
-            round_big_int_ratio(sign * _dec(dev) * _dec(dev), _dec(F.col("m"))),
+            round_big_int_ratio(sign * dec38(dev) * dec38(dev), dec38(F.col("m"))),
         ).alias("z_signed_sq"),
     )
 
@@ -1378,7 +1330,7 @@ def _dup_quality_oracle() -> str:
     )
 
 
-@_queued("corpus_dup_quality_quadrant", _dup_quality_oracle())
+@register("corpus_dup_quality_quadrant", _dup_quality_oracle())
 def corpus_dup_quality_quadrant(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplication x quality 2x2: does duplicated content pass the
     quality gate more or less often than unique content? Reports the
@@ -1492,7 +1444,7 @@ def _mia_oracle() -> str:
     )
 
 
-@_queued("privacy_membership_inference_audit", _mia_oracle())
+@register("privacy_membership_inference_audit", _mia_oracle())
 def privacy_membership_inference_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Membership-inference audit: can the quality classifier's score
     DISTINGUISH a deterministic hash-split "train" subset from the
@@ -1534,9 +1486,9 @@ def privacy_membership_inference_audit(spark: SparkSession, sf_dir: str) -> Data
     )
     w = Window.orderBy("score_q").rowsBetween(Window.unboundedPreceding, -1)
     r = g.select(
-        _dec(F.col("cnt")).alias("cnt"),
-        _dec(F.col("cpos")).alias("cpos"),
-        _dec(F.coalesce(F.sum("cnt").over(w), F.lit(0))).alias("cum"),
+        dec38(F.col("cnt")).alias("cnt"),
+        dec38(F.col("cpos")).alias("cpos"),
+        dec38(F.coalesce(F.sum("cnt").over(w), F.lit(0))).alias("cum"),
     )
     agg = r.agg(
         F.sum("cpos").alias("n_train"),
@@ -1590,7 +1542,7 @@ def _bss_oracle() -> str:
     )
 
 
-@_queued("ml_brier_skill_score", _bss_oracle())
+@register("ml_brier_skill_score", _bss_oracle())
 def ml_brier_skill_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brier skill score of the classifier against the per-language
     climatology reference: BSS = 1 − BS/BS_ref with BS_ref =
@@ -1616,18 +1568,18 @@ def ml_brier_skill_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     terms = s.groupBy("lang").agg(
         F.count(F.lit(1)).alias("n"),
         F.sum("label").alias("pos"),
-        F.sum(_dec(d) * _dec(d)).alias("sd2"),
+        F.sum(dec38(d) * dec38(d)).alias("sd2"),
     )
     e8 = F.lit(10**8).cast("decimal(38,0)")
-    ref = e8 * _dec(F.col("pos")) * _dec(F.col("n") - F.col("pos"))
+    ref = e8 * dec38(F.col("pos")) * dec38(F.col("n") - F.col("pos"))
     return terms.select(
         "lang",
         "n",
         F.col("pos").alias("n_pos"),
-        round_big_int_ratio(F.col("sd2"), e8 * _dec(F.col("n"))).alias("brier"),
+        round_big_int_ratio(F.col("sd2"), e8 * dec38(F.col("n"))).alias("brier"),
         F.when(
             (F.col("pos") > 0) & (F.col("pos") < F.col("n")),
-            round_big_int_ratio(ref - _dec(F.col("n")) * F.col("sd2"), ref),
+            round_big_int_ratio(ref - dec38(F.col("n")) * F.col("sd2"), ref),
         ).alias("brier_skill"),
     )
 
@@ -1694,7 +1646,7 @@ def _dsweep_oracle() -> str:
     )
 
 
-@_queued("graph_diameter_double_sweep", _dsweep_oracle())
+@register("graph_diameter_double_sweep", _dsweep_oracle())
 def graph_diameter_double_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Diameter lower bound of the co-purchase graph via the
     double-sweep heuristic (Magnien/Latapy/Habib): BFS from a
@@ -1858,7 +1810,7 @@ def _absorb_oracle() -> str:
     """
 
 
-@_queued("events_absorbing_markov_steps", _absorb_oracle())
+@register("events_absorbing_markov_steps", _absorb_oracle())
 def events_absorbing_markov_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Expected steps to absorption in the user-path Markov chain with
     PURCHASE as the absorbing state: t = (I − Q)⁻¹·1 over the four
@@ -1900,13 +1852,13 @@ def events_absorbing_markov_steps(spark: SparkSession, sf_dir: str) -> DataFrame
     aggs = []
     for r, fr in enumerate(ts):
         aggs.append(
-            _dec(
+            dec38(
                 F.sum(F.when(F.col("from_type") == fr, F.col("c")).otherwise(0))
             ).alias(f"cf{r}")
         )
         for c, to in enumerate(ts):
             aggs.append(
-                _dec(
+                dec38(
                     F.sum(
                         F.when(
                             (F.col("from_type") == fr) & (F.col("to_type") == to),
@@ -1992,7 +1944,7 @@ def _brown_forsythe_oracle() -> str:
       FROM zrows GROUP BY g
     ), tq AS (
       SELECT g, n, sz, szz,
-             {_sql_halfup_div('10000::HUGEINT * sz * sz', 'n')} AS t_g
+             {sql_halfup_div('10000::HUGEINT * sz * sz', 'n')} AS t_g
       FROM per_g
     ), tot AS (
       SELECT CAST(sum(n) AS HUGEINT) AS nn,
@@ -2003,7 +1955,7 @@ def _brown_forsythe_oracle() -> str:
       FROM tq
     ), stat AS (
       SELECT nn, kk,
-             t_sum - {_sql_halfup_div('10000::HUGEINT * sz_all * sz_all',
+             t_sum - {sql_halfup_div('10000::HUGEINT * sz_all * sz_all',
                                       'nn')} AS b_q,
              10000::HUGEINT * szz_all - t_sum AS d_q
       FROM tot
@@ -2020,7 +1972,7 @@ def _brown_forsythe_oracle() -> str:
     """
 
 
-@_queued("stats_brown_forsythe_quantity", _brown_forsythe_oracle())
+@register("stats_brown_forsythe_quantity", _brown_forsythe_oracle())
 def stats_brown_forsythe_quantity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brown-Forsythe test (median-centered Levene) for homogeneity of
     l_quantity spread across order priorities — the ROBUST member of
@@ -2074,9 +2026,9 @@ def stats_brown_forsythe_quantity(spark: SparkSession, sf_dir: str) -> DataFrame
         "g", "cnt", F.abs(F.col("q") - F.col("med")).alias("z")
     )
     per_g = zrows.groupBy("g").agg(
-        _dec(F.sum("cnt")).alias("n"),
-        _dec(F.sum(F.col("cnt") * F.col("z"))).alias("sz"),
-        _dec(F.sum(F.col("cnt") * F.col("z") * F.col("z"))).alias("szz"),
+        dec38(F.sum("cnt")).alias("n"),
+        dec38(F.sum(F.col("cnt") * F.col("z"))).alias("sz"),
+        dec38(F.sum(F.col("cnt") * F.col("z") * F.col("z"))).alias("szz"),
     )
     e4 = F.lit(10000).cast("decimal(38,0)")
     tq = per_g.select(
@@ -2084,11 +2036,11 @@ def stats_brown_forsythe_quantity(spark: SparkSession, sf_dir: str) -> DataFrame
         "n",
         "sz",
         "szz",
-        _halfup_div(e4 * F.col("sz") * F.col("sz"), F.col("n")).alias("t_g"),
+        halfup_div(e4 * F.col("sz") * F.col("sz"), F.col("n")).alias("t_g"),
     )
     tot = tq.agg(
         F.sum("n").alias("nn"),
-        _dec(F.count(F.lit(1))).alias("kk"),
+        dec38(F.count(F.lit(1))).alias("kk"),
         F.sum("sz").alias("sz_all"),
         F.sum("szz").alias("szz_all"),
         F.sum("t_g").alias("t_sum"),
@@ -2098,7 +2050,7 @@ def stats_brown_forsythe_quantity(spark: SparkSession, sf_dir: str) -> DataFrame
         "kk",
         (
             F.col("t_sum")
-            - _halfup_div(e4 * F.col("sz_all") * F.col("sz_all"), F.col("nn"))
+            - halfup_div(e4 * F.col("sz_all") * F.col("sz_all"), F.col("nn"))
         ).alias("b_q"),
         (e4 * F.col("szz_all") - F.col("t_sum")).alias("d_q"),
     )
@@ -2163,11 +2115,11 @@ def _fp_oracle() -> str:
              (SELECT CAST(sum(cnt * p2 * p2) AS HUGEINT) FROM pb) AS s2q2
     ), bq AS (
       SELECT m, n, sp2, sq2,
-             {_sql_halfup_div('100::HUGEINT * (m * s2p2 - sp2 * sp2)', 'm')}
+             {sql_halfup_div('100::HUGEINT * (m * s2p2 - sp2 * sp2)', 'm')}
                AS b1,
-             {_sql_halfup_div('100::HUGEINT * (n * s2q2 - sq2 * sq2)', 'n')}
+             {sql_halfup_div('100::HUGEINT * (n * s2q2 - sq2 * sq2)', 'n')}
                AS b2,
-             {_sql_halfup_div('100::HUGEINT * sp2 * sq2', 'm * n')} AS b3
+             {sql_halfup_div('100::HUGEINT * sp2 * sq2', 'm * n')} AS b3
       FROM sums
     )
     SELECT CAST(m AS BIGINT) AS n_f, CAST(n AS BIGINT) AS n_o,
@@ -2181,7 +2133,7 @@ def _fp_oracle() -> str:
     """
 
 
-@_queued("stats_fligner_policello_status", _fp_oracle())
+@register("stats_fligner_policello_status", _fp_oracle())
 def stats_fligner_policello_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fligner-Policello robust rank-order test of l_quantity between
     the two line statuses: U = (ΣP − ΣQ)/(2√(V₁+V₂+P̄Q̄)) built from
@@ -2239,9 +2191,9 @@ def stats_fligner_policello_status(spark: SparkSession, sf_dir: str) -> DataFram
 
     def sums(p, pre):
         return p.agg(
-            _dec(F.sum("cnt")).alias(f"{pre}n"),
-            _dec(F.sum(F.col("cnt") * F.col("p2"))).alias(f"{pre}s"),
-            F.sum(_dec(F.col("cnt")) * _dec(F.col("p2")) * _dec(F.col("p2"))).alias(
+            dec38(F.sum("cnt")).alias(f"{pre}n"),
+            dec38(F.sum(F.col("cnt") * F.col("p2"))).alias(f"{pre}s"),
+            F.sum(dec38(F.col("cnt")) * dec38(F.col("p2")) * dec38(F.col("p2"))).alias(
                 f"{pre}ss"
             ),
         )
@@ -2253,15 +2205,15 @@ def stats_fligner_policello_status(spark: SparkSession, sf_dir: str) -> DataFram
         F.col("b_n").alias("n"),
         F.col("a_s").alias("sp2"),
         F.col("b_s").alias("sq2"),
-        _halfup_div(
+        halfup_div(
             h * (F.col("a_n") * F.col("a_ss") - F.col("a_s") * F.col("a_s")),
             F.col("a_n"),
         ).alias("b1"),
-        _halfup_div(
+        halfup_div(
             h * (F.col("b_n") * F.col("b_ss") - F.col("b_s") * F.col("b_s")),
             F.col("b_n"),
         ).alias("b2"),
-        _halfup_div(h * F.col("a_s") * F.col("b_s"), F.col("a_n") * F.col("b_n")).alias(
+        halfup_div(h * F.col("a_s") * F.col("b_s"), F.col("a_n") * F.col("b_n")).alias(
             "b3"
         ),
     )
@@ -2340,7 +2292,7 @@ def _ksample_median_oracle() -> str:
     """
 
 
-@_queued("stats_k_sample_median_test", _ksample_median_oracle())
+@register("stats_k_sample_median_test", _ksample_median_oracle())
 def stats_k_sample_median_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     """k-sample median test of l_quantity across the five order
     priorities: dichotomize every observation at the GRAND median and
@@ -2387,8 +2339,8 @@ def stats_k_sample_median_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         grid.crossJoin(F.broadcast(med))
         .groupBy("g")
         .agg(
-            _dec(F.sum("cnt")).alias("n_g"),
-            _dec(
+            dec38(F.sum("cnt")).alias("n_g"),
+            dec38(
                 F.sum(F.when(F.col("q") > F.col("med"), F.col("cnt")).otherwise(0))
             ).alias("above"),
         )
@@ -2396,7 +2348,7 @@ def stats_k_sample_median_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     marg = cells.agg(
         F.sum("n_g").alias("n"),
         F.sum("above").alias("r_above"),
-        _dec(F.count(F.lit(1))).alias("k"),
+        dec38(F.count(F.lit(1))).alias("k"),
     )
     wm = cells.crossJoin(F.broadcast(marg))
 
@@ -2405,7 +2357,7 @@ def stats_k_sample_median_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         den = F.col("n") * F.col("n_g") * rmarg
         a = F.lit(2000000).cast("decimal(38,0)") * dev * dev + den
         b = F.lit(2).cast("decimal(38,0)") * den
-        return F.when(rmarg > 0, _dec((a - a % b) / b)).otherwise(
+        return F.when(rmarg > 0, dec38((a - a % b) / b)).otherwise(
             F.lit(0).cast("decimal(38,0)")
         )
 
@@ -2480,7 +2432,7 @@ def _bkj_oracle() -> str:
     """
 
 
-@_queued("sketch_bottomk_jaccard_users", _bkj_oracle())
+@register("sketch_bottomk_jaccard_users", _bkj_oracle())
 def sketch_bottomk_jaccard_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bottom-k (one-permutation) Jaccard estimator between the heavy
     VIEWER and heavy CLICKER audiences: take the k = 256 smallest
@@ -2554,7 +2506,7 @@ def _norm2_anova_oracle() -> str:
     return f"""
     WITH n2 AS (
       SELECT label,
-             {_sql_halfup_div(
+             {sql_halfup_div(
                  "CAST(list_sum(list_transform(embedding::DOUBLE[], "
                  "x -> CAST(floor(x * 1000000.0 + 0.5) AS BIGINT) "
                  "* CAST(floor(x * 1000000.0 + 0.5) AS BIGINT))) AS HUGEINT)",
@@ -2567,7 +2519,7 @@ def _norm2_anova_oracle() -> str:
       FROM n2 GROUP BY label
     ), tq AS (
       SELECT label, n, s, ss,
-             {_sql_halfup_div('10000::HUGEINT * s * s', 'n')} AS t_g
+             {sql_halfup_div('10000::HUGEINT * s * s', 'n')} AS t_g
       FROM per_g
     ), tot AS (
       SELECT CAST(sum(n) AS HUGEINT) AS nn,
@@ -2578,7 +2530,7 @@ def _norm2_anova_oracle() -> str:
       FROM tq
     ), stat AS (
       SELECT nn, kk,
-             t_sum - {_sql_halfup_div('10000::HUGEINT * s_all * s_all', 'nn')}
+             t_sum - {sql_halfup_div('10000::HUGEINT * s_all * s_all', 'nn')}
                AS b_q,
              10000::HUGEINT * ss_all - t_sum AS w_q
       FROM tot
@@ -2595,7 +2547,7 @@ def _norm2_anova_oracle() -> str:
     """
 
 
-@_queued("embedding_norm2_anova_by_label", _norm2_anova_oracle())
+@register("embedding_norm2_anova_by_label", _norm2_anova_oracle())
 def embedding_norm2_anova_by_label(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One-way ANOVA of embedding SQUARED NORMS across class labels —
     the norm-calibration diagnostic the embedding family lacked: if
@@ -2626,12 +2578,12 @@ def embedding_norm2_anova_by_label(spark: SparkSession, sf_dir: str) -> DataFram
     )
     n2 = raw.select(
         "label",
-        _halfup_div(
-            _dec(F.col("n2raw")), F.lit(1000000).cast("decimal(38,0)")
+        halfup_div(
+            dec38(F.col("n2raw")), F.lit(1000000).cast("decimal(38,0)")
         ).alias("v"),
     )
     per_g = n2.groupBy("label").agg(
-        _dec(F.count(F.lit(1))).alias("n"),
+        dec38(F.count(F.lit(1))).alias("n"),
         F.sum("v").alias("s"),
         F.sum(F.col("v") * F.col("v")).alias("ss"),
     )
@@ -2641,11 +2593,11 @@ def embedding_norm2_anova_by_label(spark: SparkSession, sf_dir: str) -> DataFram
         "n",
         "s",
         "ss",
-        _halfup_div(e4 * F.col("s") * F.col("s"), F.col("n")).alias("t_g"),
+        halfup_div(e4 * F.col("s") * F.col("s"), F.col("n")).alias("t_g"),
     )
     tot = tq.agg(
         F.sum("n").alias("nn"),
-        _dec(F.count(F.lit(1))).alias("kk"),
+        dec38(F.count(F.lit(1))).alias("kk"),
         F.sum("s").alias("s_all"),
         F.sum("ss").alias("ss_all"),
         F.sum("t_g").alias("t_sum"),
@@ -2655,7 +2607,7 @@ def embedding_norm2_anova_by_label(spark: SparkSession, sf_dir: str) -> DataFram
         "kk",
         (
             F.col("t_sum")
-            - _halfup_div(e4 * F.col("s_all") * F.col("s_all"), F.col("nn"))
+            - halfup_div(e4 * F.col("s_all") * F.col("s_all"), F.col("nn"))
         ).alias("b_q"),
         (e4 * F.col("ss_all") - F.col("t_sum")).alias("w_q"),
     )

@@ -21,9 +21,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.exact import dec38, halfup_div, sql_halfup_div
 from ..registry import register
 from ..tables import Tables
-from .roundeleven import _dec, _halfup_div, _sql_halfup_div
 
 # ---------------------------------------------------------------------------
 # shared: calendar-day index over the orders table (the house
@@ -52,13 +52,13 @@ def _daily_cents_idx_build(t: Tables):
     """(day, y=revenue-cents decimal, k) — the unmaterialized build."""
     cents = F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")
     daily = t.orders.groupBy(F.to_date("o_orderdate").alias("day")).agg(
-        _dec(F.sum(cents)).alias("y")
+        dec38(F.sum(cents)).alias("y")
     )
     b0 = daily.select(F.col("day").alias("day_b"))
     return (
         daily.join(F.broadcast(b0), F.col("day_b") <= F.col("day"))
         .groupBy("day", "y")
-        .agg(_dec(F.count(F.lit(1))).alias("k"))
+        .agg(dec38(F.count(F.lit(1))).alias("k"))
     )
 
 
@@ -102,13 +102,13 @@ def _daily_counts_idx(t: Tables):
 def _daily_counts_idx_build(t: Tables):
     """(day, y=order count decimal, k) — the unmaterialized build."""
     daily = t.orders.groupBy(F.to_date("o_orderdate").alias("day")).agg(
-        _dec(F.count(F.lit(1))).alias("y")
+        dec38(F.count(F.lit(1))).alias("y")
     )
     b0 = daily.select(F.col("day").alias("day_b"))
     return (
         daily.join(F.broadcast(b0), F.col("day_b") <= F.col("day"))
         .groupBy("day", "y")
-        .agg(_dec(F.count(F.lit(1))).alias("k"))
+        .agg(dec38(F.count(F.lit(1))).alias("k"))
     )
 
 
@@ -134,7 +134,7 @@ BTW_SEED_MAX = 4  # same seed set as graph_stress_centrality_seeds
 def _betweenness_oracle() -> str:
     from .graph import _SQL_EDGES
 
-    hd = _sql_halfup_div
+    hd = sql_halfup_div
     return (
         _SQL_EDGES
         + f"""
@@ -259,7 +259,7 @@ def graph_betweenness_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
             "left_anti",
         )
         .groupBy("seed", F.col("node2").alias("node"))
-        .agg(_dec(F.count(F.lit(1))).alias("sigma2"))
+        .agg(dec38(F.count(F.lit(1))).alias("sigma2"))
     )
     exp3 = (
         s2.join(adj, s2.node == adj.u)
@@ -278,7 +278,7 @@ def graph_betweenness_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
             "left_anti",
         )
         .groupBy("seed", F.col("node3").alias("node"))
-        .agg(_dec(F.sum("sigma2")).alias("sigma3"))
+        .agg(dec38(F.sum("sigma2")).alias("sigma3"))
     )
     e12 = (
         d1.join(adj, d1.node == adj.u)
@@ -298,23 +298,23 @@ def graph_betweenness_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     m = F.lit(1_000_000).cast("decimal(38,0)")
     c2 = e12.select(
-        "seed", F.col("vv").alias("node"), _halfup_div(m, F.col("sigma2")).alias("c")
+        "seed", F.col("vv").alias("node"), halfup_div(m, F.col("sigma2")).alias("c")
     )
     c3b = e23.select(
         "seed",
         F.col("w").alias("node"),
-        _halfup_div(m * F.col("sigma2"), F.col("sigma3")).alias("c"),
+        halfup_div(m * F.col("sigma2"), F.col("sigma3")).alias("c"),
     )
     svt = (
         e12.select("seed", "vv", "w")
         .join(e23.select("seed", "w", "tt", "sigma3"), ["seed", "w"])
         .groupBy("seed", "vv", "tt")
-        .agg(_dec(F.count(F.lit(1))).alias("svt"), F.max("sigma3").alias("sigma3"))
+        .agg(dec38(F.count(F.lit(1))).alias("svt"), F.max("sigma3").alias("sigma3"))
     )
     c3a = svt.select(
         "seed",
         F.col("vv").alias("node"),
-        _halfup_div(m * F.col("svt"), F.col("sigma3")).alias("c"),
+        halfup_div(m * F.col("svt"), F.col("sigma3")).alias("c"),
     )
     btw = (
         c2.unionAll(c3b)
@@ -397,10 +397,10 @@ def graph_transitivity_global(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = Tables(spark, sf_dir)
     tri = triangle_table(spark, t, sf_dir)
     deg = _degrees(edge_table(spark, t, sf_dir))
-    tcnt = tri.agg(_dec(F.count(F.lit(1))).alias("n_tri"))
+    tcnt = tri.agg(dec38(F.count(F.lit(1))).alias("n_tri"))
     wcnt = deg.agg(
         F.sum(
-            _dec(F.col("degree")) * (F.col("degree") - 1) / F.lit(2)
+            dec38(F.col("degree")) * (F.col("degree") - 1) / F.lit(2)
         )
         .cast("decimal(38,0)")
         .alias("n_wedges")
@@ -425,7 +425,7 @@ HAAR_MAX_LEVELS = 16  # static explode list; runtime-filtered to floor(log2 n)
 def _haar_oracle() -> str:
     from ..functions.exact import sql_round_big_int_ratio
 
-    hd = _sql_halfup_div
+    hd = sql_halfup_div
     levels = ", ".join(str(j) for j in range(1, HAAR_MAX_LEVELS + 1))
     return f"""
     WITH {_SQL_DAILY_CENTS_IDX}
@@ -523,7 +523,7 @@ def events_haar_wavelet_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
     pw = F.expr("shiftleft(CAST(1 AS BIGINT), CAST(j AS INT))").cast("decimal(38,0)")
     energy = details.groupBy("j").agg(
         F.count(F.lit(1)).cast("long").alias("n_blocks"),
-        F.sum(_halfup_div(m * F.col("d") * F.col("d"), pw)).alias("e"),
+        F.sum(halfup_div(m * F.col("d") * F.col("d"), pw)).alias("e"),
     )
     from ..functions.exact import round_big_int_ratio
 
@@ -549,7 +549,7 @@ PACF_M = 1_000_000
 
 
 def _pacf_oracle() -> str:
-    hd = _sql_halfup_div
+    hd = sql_halfup_div
     m = PACF_M
     return f"""
     WITH {_SQL_DAILY_COUNTS_IDX}
@@ -626,7 +626,7 @@ def events_pacf_durbin_levinson(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = Tables(spark, sf_dir)
     idx = _daily_counts_idx(t)
     tot = idx.agg(
-        _dec(F.count(F.lit(1))).alias("n"), F.sum("y").alias("s")
+        dec38(F.count(F.lit(1))).alias("n"), F.sum("y").alias("s")
     )
     cent = idx.crossJoin(F.broadcast(tot)).select(
         "k", (F.col("n") * F.col("y") - F.col("s")).alias("x"), "n"
@@ -651,22 +651,22 @@ def events_pacf_durbin_levinson(spark: SparkSession, sf_dir: str) -> DataFrame:
     cc = c0.crossJoin(F.broadcast(cks)).filter(F.col("c0") > 0)
     rho = cc.select(
         F.col("n").cast("long").alias("n_days"),
-        _halfup_div(m * F.col("c1"), F.col("c0")).alias("r1"),
-        _halfup_div(m * F.col("c2"), F.col("c0")).alias("r2"),
-        _halfup_div(m * F.col("c3"), F.col("c0")).alias("r3"),
+        halfup_div(m * F.col("c1"), F.col("c0")).alias("r1"),
+        halfup_div(m * F.col("c2"), F.col("c0")).alias("r2"),
+        halfup_div(m * F.col("c3"), F.col("c0")).alias("r3"),
     )
     p2 = rho.select(
         "*",
         F.when(
             m * m - F.col("r1") * F.col("r1") > 0,
-            _halfup_div(
+            halfup_div(
                 m * (m * F.col("r2") - F.col("r1") * F.col("r1")),
                 m * m - F.col("r1") * F.col("r1"),
             ),
         ).alias("f22"),
     ).filter(F.col("f22").isNotNull())
     p21 = p2.select(
-        "*", _halfup_div(F.col("r1") * (m - F.col("f22")), m).alias("f21")
+        "*", halfup_div(F.col("r1") * (m - F.col("f22")), m).alias("f21")
     )
     p3 = p21.select(
         "*",
@@ -691,7 +691,7 @@ def events_pacf_durbin_levinson(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("f22").cast("double") / md).alias("pacf2"),
         F.when(
             F.col("den3") > 0,
-            _halfup_div(m * F.col("num3"), F.col("den3")).cast("double") / md,
+            halfup_div(m * F.col("num3"), F.col("den3")).cast("double") / md,
         ).alias("pacf3"),
     )
 
@@ -706,7 +706,7 @@ HILL_K = 100  # tail order statistics used (k+1 fetched)
 def _hill_oracle() -> str:
     from ..functions.detmath import sql_det_ln_steps
 
-    hd = _sql_halfup_div
+    hd = sql_halfup_div
     return f"""
     WITH gaps AS (
       SELECT epoch_us(ts) - lag(epoch_us(ts)) OVER w AS g
@@ -780,7 +780,7 @@ def events_hill_tail_interevent(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("long").alias("n_top"),
     )
     s = lg.crossJoin(F.broadcast(thr)).agg(
-        F.sum(_dec(F.col("lg") - F.col("l_k1"))).alias("sum_micro"),
+        F.sum(dec38(F.col("lg") - F.col("l_k1"))).alias("sum_micro"),
         F.max("n_top").alias("n_top"),
         F.max("g_k1").alias("g_k1"),
     )
@@ -790,7 +790,7 @@ def events_hill_tail_interevent(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("g_k1").alias("threshold_us"),
         F.when(
             F.col("sum_micro") > 0,
-            _halfup_div(
+            halfup_div(
                 F.lit(10**12).cast("decimal(38,0)") * (F.col("n_top") - 1),
                 F.col("sum_micro"),
             ).cast("double")
@@ -813,7 +813,7 @@ def _reservoir_oracle() -> str:
     from ..functions.exact import sql_round_int_ratio
 
     h = f"(((doc_id % {RES_P}) * {RES_A} + {RES_B}) % {RES_P})"
-    hd = _sql_halfup_div
+    hd = sql_halfup_div
     return f"""
     WITH hashed AS (
       SELECT doc_id, lang, {h} AS h FROM documents
@@ -882,9 +882,9 @@ def corpus_reservoir_sample_audit(spark: SparkSession, sf_dir: str) -> DataFrame
         "h_k",
         F.when(
             F.col("h_k") > 0,
-            _halfup_div(
-                (_dec(F.col("k")) - 1) * F.lit(RES_P).cast("decimal(38,0)"),
-                _dec(F.col("h_k")),
+            halfup_div(
+                (dec38(F.col("k")) - 1) * F.lit(RES_P).cast("decimal(38,0)"),
+                dec38(F.col("h_k")),
             ),
         ).alias("est_n"),
     )

@@ -17,9 +17,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.exact import dec38, halfup_div, sql_halfup_div
 from ..registry import register
 from ..tables import Tables
-from .roundeleven import _dec, _halfup_div, _sql_halfup_div
 from .roundeleven2 import _SQL_DAILY_CENTS_IDX, _daily_cents_idx
 
 # ---------------------------------------------------------------------------
@@ -114,9 +114,9 @@ def stats_cucconi_halves(spark: SparkSession, sf_dir: str) -> DataFrame:
             | ((F.col("y_b") == F.col("y")) & (F.col("day_b") <= F.col("day"))),
         )
         .groupBy("day", "grp")
-        .agg(_dec(F.count(F.lit(1))).alias("r"))
+        .agg(dec38(F.count(F.lit(1))).alias("r"))
     )
-    tot = rk.agg(_dec(F.count(F.lit(1))).alias("nt"))
+    tot = rk.agg(dec38(F.count(F.lit(1))).alias("nt"))
     uv = rk.crossJoin(F.broadcast(tot)).agg(
         F.sum(
             F.when(F.col("grp") == 1, F.col("r") * F.col("r")).otherwise(F.lit(0))
@@ -130,11 +130,11 @@ def stats_cucconi_halves(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.when(F.col("grp") == 1, 1).otherwise(0)).cast("long").alias("n2"),
         F.sum(F.when(F.col("grp") == 0, 1).otherwise(0)).cast("long").alias("m1"),
     )
-    nt = _dec(F.col("m1")) + F.col("n2")
+    nt = dec38(F.col("m1")) + F.col("n2")
     q = (2 * nt + 1) * (8 * nt + 11)
     p = 2 * (nt * nt - 4) - q
-    a = 6 * F.col("u") - _dec(F.col("n2")) * (nt + 1) * (2 * nt + 1)
-    bb = 6 * F.col("v") - _dec(F.col("n2")) * (nt + 1) * (2 * nt + 1)
+    a = 6 * F.col("u") - dec38(F.col("n2")) * (nt + 1) * (2 * nt + 1)
+    bb = 6 * F.col("v") - dec38(F.col("n2")) * (nt + 1) * (2 * nt + 1)
     return uv.select(
         nt.cast("long").alias("n_days"),
         F.col("m1").alias("n_first"),
@@ -305,7 +305,7 @@ def stats_blomqvist_beta(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("med_yq").alias("median_disc_cents"),
         )
     )
-    den = _dec(F.col("n11")) + F.col("n22") + F.col("n12") + F.col("n21")
+    den = dec38(F.col("n11")) + F.col("n22") + F.col("n12") + F.col("n21")
     return quad.crossJoin(F.broadcast(nn)).select(
         F.col("n").alias("n_rows"),
         "median_qty",
@@ -318,7 +318,7 @@ def stats_blomqvist_beta(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(
             den > 0,
             round_big_int_ratio(
-                _dec(F.col("n11")) + F.col("n22") - F.col("n12") - F.col("n21"), den
+                dec38(F.col("n11")) + F.col("n22") - F.col("n12") - F.col("n21"), den
             ),
         ).alias("blomqvist_beta"),
     )
@@ -550,9 +550,9 @@ def stats_fleiss_kappa_gates(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.size(F.split(F.col("text"), "\\.", -1)) - 1 >= COCHRAN_MIN_SENTENCES, 1
     ).otherwise(0)
     agg = t.documents.select((a + b + c).alias("l")).agg(
-        _dec(F.count(F.lit(1))).alias("n"),
-        _dec(F.sum("l")).alias("sl"),
-        _dec(F.sum(F.col("l") * F.col("l"))).alias("sll"),
+        dec38(F.count(F.lit(1))).alias("n"),
+        dec38(F.sum("l")).alias("sl"),
+        dec38(F.sum(F.col("l") * F.col("l"))).alias("sll"),
     )
     tt = 3 * F.col("n")
     pbar_num = F.col("sll") - 3 * F.col("sl") + 3 * F.col("n")
@@ -702,7 +702,7 @@ TOST_T_CRIT_SQ_MICRO = 2_706_025  # 1.645^2 at 1e-6 (one-sided z, alpha=.05)
 
 
 def _tost_oracle() -> str:
-    hd = _sql_halfup_div
+    hd = sql_halfup_div
     return f"""
     WITH ab AS (
       SELECT CAST(user_id % 2 AS BIGINT) AS grp,
@@ -783,30 +783,30 @@ def stats_tost_equivalence_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("v"),
     )
     m = ab.agg(
-        _dec(F.sum(F.when(F.col("grp") == 0, 1).otherwise(0))).alias("n1"),
-        _dec(F.sum(F.when(F.col("grp") == 1, 1).otherwise(0))).alias("n2"),
-        _dec(F.sum(F.when(F.col("grp") == 0, F.col("v")).otherwise(0))).alias("s1"),
-        _dec(F.sum(F.when(F.col("grp") == 1, F.col("v")).otherwise(0))).alias("s2"),
-        F.sum(F.when(F.col("grp") == 0, _dec(F.col("v")) * F.col("v")).otherwise(0)).alias("q1"),
-        F.sum(F.when(F.col("grp") == 1, _dec(F.col("v")) * F.col("v")).otherwise(0)).alias("q2"),
+        dec38(F.sum(F.when(F.col("grp") == 0, 1).otherwise(0))).alias("n1"),
+        dec38(F.sum(F.when(F.col("grp") == 1, 1).otherwise(0))).alias("n2"),
+        dec38(F.sum(F.when(F.col("grp") == 0, F.col("v")).otherwise(0))).alias("s1"),
+        dec38(F.sum(F.when(F.col("grp") == 1, F.col("v")).otherwise(0))).alias("s2"),
+        F.sum(F.when(F.col("grp") == 0, dec38(F.col("v")) * F.col("v")).otherwise(0)).alias("q1"),
+        F.sum(F.when(F.col("grp") == 1, dec38(F.col("v")) * F.col("v")).otherwise(0)).alias("q2"),
     ).filter((F.col("n1") > 1) & (F.col("n2") > 1))
     mm = F.lit(1_000_000).cast("decimal(38,0)")
     micro = m.select(
         "n1",
         "n2",
-        _halfup_div(
+        halfup_div(
             mm * (F.col("s1") * F.col("n2") - F.col("s2") * F.col("n1")),
             F.col("n1") * F.col("n2"),
         ).alias("d_micro"),
-        _halfup_div(
+        halfup_div(
             mm * TOST_MARGIN_PCT * (F.col("s1") + F.col("s2")),
             F.lit(100).cast("decimal(38,0)") * (F.col("n1") + F.col("n2")),
         ).alias("delta_micro"),
-        _halfup_div(
+        halfup_div(
             mm * (F.col("n1") * F.col("q1") - F.col("s1") * F.col("s1")),
             F.col("n1") * F.col("n1") * (F.col("n1") - 1),
         ).alias("v1_micro"),
-        _halfup_div(
+        halfup_div(
             mm * (F.col("n2") * F.col("q2") - F.col("s2") * F.col("s2")),
             F.col("n2") * F.col("n2") * (F.col("n2") - 1),
         ).alias("v2_micro"),
@@ -821,8 +821,8 @@ def stats_tost_equivalence_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     lo = F.col("d_micro") + F.col("delta_micro")
     hi = F.col("delta_micro") - F.col("d_micro")
-    t_lo = _halfup_div(lo * lo, F.col("se2_micro"))
-    t_hi = _halfup_div(hi * hi, F.col("se2_micro"))
+    t_lo = halfup_div(lo * lo, F.col("se2_micro"))
+    t_hi = halfup_div(hi * hi, F.col("se2_micro"))
     crit = F.lit(TOST_T_CRIT_SQ_MICRO).cast("decimal(38,0)")
     return se.select(
         F.col("n1").cast("long").alias("n_a"),

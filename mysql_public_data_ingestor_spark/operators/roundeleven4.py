@@ -20,10 +20,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.exact import dec38, halfup_div, sql_halfup_div
 from ..registry import register
 from ..tables import Tables
 from .corpus import _SQL_TOKENS
-from .roundeleven import _dec, _halfup_div, _sql_halfup_div
 
 # ---------------------------------------------------------------------------
 # 1. Vocabulary-richness indices per language
@@ -53,7 +53,7 @@ def _yule_oracle() -> str:
              AS yule_k,
            {sql_round_big_int_ratio('v * v', 'n')} AS guiraud_r_sq,
            CASE WHEN ln_ > 0 THEN
-             CAST({_sql_halfup_div('1000000::HUGEINT * lv', 'ln_')} AS BIGINT)
+             CAST({sql_halfup_div('1000000::HUGEINT * lv', 'ln_')} AS BIGINT)
            END AS herdan_c_micro
     FROM ln__rel ORDER BY lang
     """
@@ -89,9 +89,9 @@ def text_yule_k_richness(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     tc = toks.groupBy("lang", "token").agg(F.count(F.lit(1)).alias("c"))
     spec = tc.groupBy("lang").agg(
-        _dec(F.sum("c")).alias("n"),
-        _dec(F.count(F.lit(1))).alias("v"),
-        F.sum(_dec(F.col("c")) * F.col("c")).alias("s2"),
+        dec38(F.sum("c")).alias("n"),
+        dec38(F.count(F.lit(1))).alias("v"),
+        F.sum(dec38(F.col("c")) * F.col("c")).alias("s2"),
     )
     lv = det_ln_q(F.col("v").cast("long"))
     ln_ = det_ln_q(F.col("n").cast("long"))
@@ -108,7 +108,7 @@ def text_yule_k_richness(spark: SparkSession, sf_dir: str) -> DataFrame:
             "guiraud_r_sq"
         ),
         F.when(
-            ln_ > 0, _halfup_div(m * lv, _dec(ln_))
+            ln_ > 0, halfup_div(m * lv, dec38(ln_))
         ).cast("long").alias("herdan_c_micro"),
     ).orderBy("lang")
 
@@ -178,8 +178,8 @@ def _aic_oracle() -> str:
     )
     SELECT lang, CAST(n AS BIGINT) AS n_tokens, CAST(v AS BIGINT) AS v_unigram,
            CAST(nb AS BIGINT) AS n_bigrams, CAST(kb AS BIGINT) AS v_bigram,
-           CAST({_sql_halfup_div('h1n', 'n')} AS BIGINT) AS h1_micro,
-           CAST({_sql_halfup_div('h2b', 'nb')} AS BIGINT) AS h2_micro,
+           CAST({sql_halfup_div('h1n', 'n')} AS BIGINT) AS h1_micro,
+           CAST({sql_halfup_div('h2b', 'nb')} AS BIGINT) AS h2_micro,
            CAST(2 * v * 1000000 + 2 * h1n AS BIGINT) AS aic1_micro,
            CAST(2 * kb * 1000000 + 2 * h2b AS BIGINT) AS aic2_micro,
            (2 * kb * 1000000 + 2 * h2b) < (2 * v * 1000000 + 2 * h1n)
@@ -235,13 +235,13 @@ def text_lm_order_aic(spark: SparkSession, sf_dir: str) -> DataFrame:
         .union(cc.select("c"))
         .distinct()
     )
-    q = dc.select("c", (_dec(F.col("c")) * det_ln_q(F.col("c"))).alias("clnc"))
+    q = dc.select("c", (dec38(F.col("c")) * det_ln_q(F.col("c"))).alias("clnc"))
     su = (
         uc.join(F.broadcast(q), "c")
         .groupBy("lang")
         .agg(
-            _dec(F.sum("c")).alias("n"),
-            _dec(F.count(F.lit(1))).alias("v"),
+            dec38(F.sum("c")).alias("n"),
+            dec38(F.count(F.lit(1))).alias("v"),
             F.sum("clnc").alias("sclnc"),
         )
     )
@@ -249,8 +249,8 @@ def text_lm_order_aic(spark: SparkSession, sf_dir: str) -> DataFrame:
         bc.join(F.broadcast(q), "c")
         .groupBy("lang")
         .agg(
-            _dec(F.sum("c")).alias("nb"),
-            _dec(F.count(F.lit(1))).alias("kb"),
+            dec38(F.sum("c")).alias("nb"),
+            dec38(F.count(F.lit(1))).alias("kb"),
             F.sum("clnc").alias("sclnc_b"),
         )
     )
@@ -283,8 +283,8 @@ def text_lm_order_aic(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("v").cast("long").alias("v_unigram"),
         F.col("nb").cast("long").alias("n_bigrams"),
         F.col("kb").cast("long").alias("v_bigram"),
-        _halfup_div(F.col("h1n"), F.col("n")).cast("long").alias("h1_micro"),
-        _halfup_div(F.col("h2b"), F.col("nb")).cast("long").alias("h2_micro"),
+        halfup_div(F.col("h1n"), F.col("n")).cast("long").alias("h1_micro"),
+        halfup_div(F.col("h2b"), F.col("nb")).cast("long").alias("h2_micro"),
         aic1.cast("long").alias("aic1_micro"),
         aic2.cast("long").alias("aic2_micro"),
         (aic2 < aic1).alias("bigram_wins"),
@@ -620,7 +620,7 @@ def _burrows_oracle() -> str:
     r AS (
       -- micro relative frequency of every top token in every lang
       SELECT l.lang, tt.token,
-             {_sql_halfup_div('1000000::HUGEINT * coalesce(tc.c, 0)', 'l.n')} AS r
+             {sql_halfup_div('1000000::HUGEINT * coalesce(tc.c, 0)', 'l.n')} AS r
       FROM langs l CROSS JOIN topt tt
       LEFT JOIN tc ON tc.lang = l.lang AND tc.token = tt.token
     ), var_t AS (
@@ -635,7 +635,7 @@ def _burrows_oracle() -> str:
     ), terms AS (
       SELECT p.lang_a, p.lang_b,
              CASE WHEN v.lcnt * v.srr - v.sr * v.sr > 0 THEN
-               {_sql_halfup_div(
+               {sql_halfup_div(
                    '1000000::HUGEINT * v.lcnt * v.lcnt * p.d * p.d',
                    '(v.lcnt * v.srr - v.sr * v.sr)')}
              ELSE 0 END AS term,
@@ -645,7 +645,7 @@ def _burrows_oracle() -> str:
     SELECT lang_a, lang_b,
            CAST(sum(used) AS BIGINT) AS n_terms,
            CAST(CASE WHEN sum(used) > 0 THEN
-             {_sql_halfup_div('CAST(sum(term) AS HUGEINT)', 'CAST(sum(used) AS HUGEINT)')}
+             {sql_halfup_div('CAST(sum(term) AS HUGEINT)', 'CAST(sum(used) AS HUGEINT)')}
            END AS BIGINT) AS delta_sq_micro
     FROM terms GROUP BY lang_a, lang_b
     ORDER BY lang_a, lang_b
@@ -694,13 +694,13 @@ def text_burrows_delta_langpairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "lang",
             "token",
-            _halfup_div(
-                m * _dec(F.coalesce(F.col("c"), F.lit(0))), _dec(F.col("n"))
+            halfup_div(
+                m * dec38(F.coalesce(F.col("c"), F.lit(0))), dec38(F.col("n"))
             ).alias("r"),
         )
     )
     var_t = r.groupBy("token").agg(
-        _dec(F.count(F.lit(1))).alias("lcnt"),
+        dec38(F.count(F.lit(1))).alias("lcnt"),
         F.sum("r").alias("sr"),
         F.sum(F.col("r") * F.col("r")).alias("srr"),
     )
@@ -715,7 +715,7 @@ def text_burrows_delta_langpairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         "lang_b",
         F.when(
             vnum > 0,
-            _halfup_div(m * F.col("lcnt") * F.col("lcnt") * d * d, vnum),
+            halfup_div(m * F.col("lcnt") * F.col("lcnt") * d * d, vnum),
         )
         .otherwise(F.lit(0).cast("decimal(38,0)"))
         .alias("term"),
@@ -727,7 +727,7 @@ def text_burrows_delta_langpairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("used").cast("long").alias("n_terms"),
             F.when(
                 F.sum("used") > 0,
-                _halfup_div(F.sum("term"), _dec(F.sum("used"))),
+                halfup_div(F.sum("term"), dec38(F.sum("used"))),
             )
             .cast("long")
             .alias("delta_sq_micro"),

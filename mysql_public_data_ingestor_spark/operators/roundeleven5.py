@@ -21,9 +21,9 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.exact import dec38, halfup_div, sql_halfup_div
 from ..registry import register
 from ..tables import Tables
-from .roundeleven import _dec, _halfup_div, _sql_halfup_div
 from .sketches import _P, _sql_uhash, _uhash
 
 # ---------------------------------------------------------------------------
@@ -274,7 +274,7 @@ def _benford2_oracle() -> str:
     cases = " ".join(
         f"WHEN {d} THEN {p}" for d, p in F2D_P_MICRO.items()
     )
-    hd = _sql_halfup_div
+    hd = sql_halfup_div
     return f"""
     WITH v AS (
       SELECT CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS cents
@@ -330,7 +330,7 @@ def dq_benford_first_two_digits(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).filter(F.col("cents") >= 10)
     d2 = v.select(F.substring(F.col("cents").cast("string"), 1, 2).cast("long").alias("d"))
     obs = d2.groupBy("d").agg(F.count(F.lit(1)).cast("long").alias("n_obs"))
-    nn = d2.agg(_dec(F.count(F.lit(1))).alias("n"))
+    nn = d2.agg(dec38(F.count(F.lit(1))).alias("n"))
     spine = d2.sparkSession.range(10, 100).select(F.col("id").alias("d"))
     pmap = F.create_map(
         *[F.lit(x) for dp in F2D_P_MICRO.items() for x in dp]
@@ -346,12 +346,12 @@ def dq_benford_first_two_digits(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n",
         )
     )
-    diff = m * F.col("n_obs") - F.col("n") * _dec(F.col("expected_micro"))
+    diff = m * F.col("n_obs") - F.col("n") * dec38(F.col("expected_micro"))
     return joined.select(
         "first_two",
         "n_obs",
         "expected_micro",
-        _halfup_div(diff * diff, F.col("n") * _dec(F.col("expected_micro")) * m)
+        halfup_div(diff * diff, F.col("n") * dec38(F.col("expected_micro")) * m)
         .cast("long")
         .alias("chi2_contrib_micro"),
     ).orderBy("first_two")
@@ -503,7 +503,7 @@ def _twonn_oracle() -> str:
     ), nn AS (SELECT CAST(count(*) AS BIGINT) AS n_vecs FROM qv)
     SELECT nn.n_vecs, s.n_used,
            CASE WHEN s.sum_2lnmu > 0 THEN
-             CAST({_sql_halfup_div('2000000000000::HUGEINT * s.n_used',
+             CAST({sql_halfup_div('2000000000000::HUGEINT * s.n_used',
                                    's.sum_2lnmu')} AS BIGINT)
            END AS intrinsic_dim_micro
     FROM s, nn
@@ -600,7 +600,7 @@ def embedding_intrinsic_dim_twonn(spark: SparkSession, sf_dir: str) -> DataFrame
     )
     s = lnr.agg(
         F.count(F.lit(1)).cast("long").alias("n_used"),
-        _dec(F.sum("l2mu")).alias("sum_2lnmu"),
+        dec38(F.sum("l2mu")).alias("sum_2lnmu"),
     )
     nn = qv.agg(F.count(F.lit(1)).cast("long").alias("n_vecs"))
     return s.crossJoin(F.broadcast(nn)).select(
@@ -608,7 +608,7 @@ def embedding_intrinsic_dim_twonn(spark: SparkSession, sf_dir: str) -> DataFrame
         "n_used",
         F.when(
             F.col("sum_2lnmu") > 0,
-            _halfup_div(
+            halfup_div(
                 F.lit(2_000_000_000_000).cast("decimal(38,0)") * F.col("n_used"),
                 F.col("sum_2lnmu"),
             ),
@@ -664,7 +664,7 @@ def _hll_oracle() -> str:
       FROM s WHERE n_empty > 0
     ), {sql_det_ln_steps('lcarg', 'arg', 'lnr', as_double=True)}
     SELECT {m}::BIGINT AS m_registers, ex.exact_users, s.n_empty, s.max_reg,
-           CAST({_sql_halfup_div(
+           CAST({sql_halfup_div(
                f'{HLL_ALPHA_MICRO}::HUGEINT * {m} * {m} * (1::HUGEINT << {wb + 1})',
                '1000000::HUGEINT * s.denom_units')} AS BIGINT) AS hll_raw_est,
            (SELECT CAST(floor({m} * lnr + 0.5) AS BIGINT) FROM lnr_rel)
@@ -738,7 +738,7 @@ def sketch_hll_registers_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             + F.lit(0.5)
         ).cast("long"),
     )
-    raw = _halfup_div(
+    raw = halfup_div(
         F.lit(HLL_ALPHA_MICRO).cast("decimal(38,0)")
         * m
         * m

@@ -17,9 +17,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.exact import dec38, halfup_div, sql_halfup_div
 from ..registry import register
 from ..tables import Tables
-from .roundeleven import _dec, _halfup_div, _sql_halfup_div
 from .roundeleven2 import _SQL_DAILY_COUNTS_IDX, _daily_counts_idx
 
 # ---------------------------------------------------------------------------
@@ -45,11 +45,11 @@ _SQL_STL_DET_CTES = (
       GROUP BY a.day, a.y, a.k
     ), det AS (
       SELECT day, k, dow,
-             {_sql_halfup_div('1000000::HUGEINT * (7 * y - s7)', '7::HUGEINT')} AS d
+             {sql_halfup_div('1000000::HUGEINT * (7 * y - s7)', '7::HUGEINT')} AS d
       FROM tr
     ), seas0 AS (
       SELECT dow, CAST(count(*) AS HUGEINT) AS n_d,
-             CAST({_sql_halfup_div('CAST(sum(d) AS HUGEINT)',
+             CAST({sql_halfup_div('CAST(sum(d) AS HUGEINT)',
                                    'CAST(count(*) AS HUGEINT)')}
                   AS BIGINT) AS s_micro
       FROM det GROUP BY dow
@@ -62,7 +62,7 @@ _SQL_STL_DET_CTES = (
 
 
 def _stl_oracle() -> str:
-    hd = _sql_halfup_div
+    hd = sql_halfup_div
     return f"""
     WITH {_SQL_STL_DET_CTES}
     , seas AS (SELECT * FROM seas0), rem AS (
@@ -115,7 +115,7 @@ def _stl_det(t: Tables) -> DataFrame:
         "day",
         "k",
         "dow",
-        _halfup_div(
+        halfup_div(
             m6 * (7 * F.col("y") - F.col("s7")), F.lit(7).cast("decimal(38,0)")
         ).alias("d"),
     )
@@ -127,10 +127,10 @@ def _stl_rem(t: Tables) -> DataFrame:
     ``_SQL_STL_DET_CTES``)."""
     det = _stl_det(t)
     seas = det.groupBy("dow").agg(
-        _halfup_div(F.sum("d"), _dec(F.count(F.lit(1)))).cast("long").alias("s_micro")
+        halfup_div(F.sum("d"), dec38(F.count(F.lit(1)))).cast("long").alias("s_micro")
     )
     return det.join(F.broadcast(seas), "dow").select(
-        "day", "k", "dow", "d", (F.col("d") - _dec(F.col("s_micro"))).alias("r")
+        "day", "k", "dow", "d", (F.col("d") - dec38(F.col("s_micro"))).alias("r")
     )
 
 
@@ -158,14 +158,14 @@ def events_stl_dow_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     det = _stl_det(t)
     seas = det.groupBy("dow").agg(
         F.count(F.lit(1)).cast("long").alias("n_days"),
-        _halfup_div(F.sum("d"), _dec(F.count(F.lit(1)))).cast("long").alias("seasonal_micro"),
+        halfup_div(F.sum("d"), dec38(F.count(F.lit(1)))).cast("long").alias("seasonal_micro"),
     )
     m6 = F.lit(1_000_000).cast("decimal(38,0)")
     rem = det.join(F.broadcast(seas.select("dow", "seasonal_micro")), "dow").select(
-        "d", (F.col("d") - _dec(F.col("seasonal_micro"))).alias("r")
+        "d", (F.col("d") - dec38(F.col("seasonal_micro"))).alias("r")
     )
     v = rem.agg(
-        _dec(F.count(F.lit(1))).alias("m"),
+        dec38(F.count(F.lit(1))).alias("m"),
         F.sum("d").alias("sd"),
         F.sum(F.col("d") * F.col("d")).alias("sdd"),
         F.sum("r").alias("sr"),
@@ -174,7 +174,7 @@ def events_stl_dow_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     vd = F.col("m") * F.col("sdd") - F.col("sd") * F.col("sd")
     vr = F.col("m") * F.col("srr") - F.col("sr") * F.col("sr")
     strength = v.select(
-        F.when(vd > 0, _halfup_div(m6 * (vd - vr), vd))
+        F.when(vd > 0, halfup_div(m6 * (vd - vr), vd))
         .cast("long")
         .alias("seasonal_strength_micro")
     )
@@ -329,7 +329,7 @@ def graph_eccentricity_profile_seeds(spark: SparkSession, sf_dir: str) -> DataFr
 
 
 def _did_oracle() -> str:
-    hd = _sql_halfup_div
+    hd = sql_halfup_div
     return f"""
     WITH {_SQL_DAILY_COUNTS_IDX}
     , nn AS (SELECT CAST(count(*) AS HUGEINT) AS n FROM idx),
@@ -400,7 +400,7 @@ def events_weekend_effect_did(spark: SparkSession, sf_dir: str) -> DataFrame:
         "y",
     )
     cells = lab.groupBy("period", "weekend").agg(
-        _dec(F.count(F.lit(1))).alias("n_days"),
+        dec38(F.count(F.lit(1))).alias("n_days"),
         F.sum("y").alias("s"),
         F.sum(F.col("y") * F.col("y")).alias("q"),
     )
@@ -409,10 +409,10 @@ def events_weekend_effect_did(spark: SparkSession, sf_dir: str) -> DataFrame:
         "period",
         "weekend",
         "n_days",
-        _halfup_div(m6 * F.col("s"), F.col("n_days")).alias("mean_micro"),
+        halfup_div(m6 * F.col("s"), F.col("n_days")).alias("mean_micro"),
         F.when(
             F.col("n_days") > 1,
-            _halfup_div(
+            halfup_div(
                 m6 * (F.col("n_days") * F.col("q") - F.col("s") * F.col("s")),
                 F.col("n_days") * F.col("n_days") * (F.col("n_days") - 1),
             ),
@@ -433,7 +433,7 @@ def events_weekend_effect_did(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("d"),
         "se2",
     )
-    tsq = _halfup_div(F.col("d") * F.col("d"), F.col("se2"))
+    tsq = halfup_div(F.col("d") * F.col("d"), F.col("se2"))
     return (
         means.crossJoin(F.broadcast(did))
         .select(
@@ -459,7 +459,7 @@ def events_weekend_effect_did(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _dowhour_oracle() -> str:
-    hd = _sql_halfup_div
+    hd = sql_halfup_div
     return f"""
     WITH cells AS (
       SELECT CAST(isodow(CAST(ts AS DATE)) AS BIGINT) AS dow,
@@ -509,7 +509,7 @@ def stats_chi2_dow_hour_independence(spark: SparkSession, sf_dir: str) -> DataFr
     cells = t.events.groupBy(
         (F.weekday(F.to_date("ts")) + 1).cast("long").alias("dow"),
         F.hour("ts").cast("long").alias("hr"),
-    ).agg(_dec(F.count(F.lit(1))).alias("o"))
+    ).agg(dec38(F.count(F.lit(1))).alias("o"))
     margins = cells.groupBy("dow").agg(F.sum("o").alias("rd"))
     cols = cells.groupBy("hr").agg(F.sum("o").alias("ch"))
     nn = cells.agg(F.sum("o").alias("n"))
@@ -528,7 +528,7 @@ def stats_chi2_dow_hour_independence(spark: SparkSession, sf_dir: str) -> DataFr
             # truncated to whole units identically in both engines and
             # parity stayed green); the replica's float chi-square
             # anchor caught it — the §5i.11 twin-sided class again
-            _halfup_div(m6 * diff * diff, F.col("n") * F.col("rd") * F.col("ch"))
+            halfup_div(m6 * diff * diff, F.col("n") * F.col("rd") * F.col("ch"))
             .cast("long")
             .alias("chi2_contrib_micro"),
         )

@@ -26,9 +26,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.exact import dec38, halfup_div, sql_halfup_div
 from ..registry import register
 from ..tables import Tables
-from .roundeleven import _dec, _halfup_div, _sql_halfup_div
 
 # Residuals quantize at centi resolution: daily-count residuals are
 # O(sqrt(y)) ~ tens at sf0.1, so 0.01 resolution keeps the per-value
@@ -64,7 +64,7 @@ _SQL_BP_RESID_CTES = f"""
       FROM s1
     ), resid AS (
       SELECT i.k,
-             {_sql_halfup_div(f'{BP_RES_SCALE}::HUGEINT * '
+             {sql_halfup_div(f'{BP_RES_SCALE}::HUGEINT * '
                  '(c.n * c.d * i.y - c.d * c.sy + c.b * c.sk - c.n * c.b * i.k)',
                  'c.n * c.d')} AS u
       FROM idx i, coef c
@@ -73,7 +73,7 @@ _SQL_BP_RESID_CTES = f"""
 
 
 def _bp_oracle() -> str:
-    hd = _sql_halfup_div
+    hd = sql_halfup_div
     return f"""
     WITH {_SQL_BP_RESID_CTES}, s2 AS (
       SELECT CAST(count(*) AS HUGEINT) AS n,
@@ -110,7 +110,7 @@ def _bp_coef(t: Tables) -> DataFrame:
     ``_SQL_BP_RESID_CTES``)."""
     idx = _bp_idx(t)
     s1 = idx.agg(
-        _dec(F.count(F.lit(1))).alias("n"),
+        dec38(F.count(F.lit(1))).alias("n"),
         F.sum("k").alias("sk"),
         F.sum(F.col("k") * F.col("k")).alias("skk"),
         F.sum("y").alias("sy"),
@@ -172,7 +172,7 @@ def _bp_resid_build(t: Tables) -> DataFrame:
     )
     return _bp_idx(t).crossJoin(F.broadcast(coef)).select(
         "k",
-        _halfup_div(
+        halfup_div(
             F.lit(BP_RES_SCALE).cast("decimal(38,0)") * rnum, F.col("n") * F.col("d")
         ).alias("u"),
     )
@@ -210,7 +210,7 @@ def stats_breusch_pagan_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     resid = _bp_resid(t)
     z = F.col("u") * F.col("u")
     s2 = resid.agg(
-        _dec(F.count(F.lit(1))).alias("n"),
+        dec38(F.count(F.lit(1))).alias("n"),
         F.sum("k").alias("sk"),
         F.sum(z).alias("sz"),
         F.sum(F.col("k") * z).alias("skz"),
@@ -223,11 +223,11 @@ def stats_breusch_pagan_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("n") * F.col("skz") - F.col("sk") * F.col("sz")).alias("cc"),
         (F.col("n") * F.col("szz") - F.col("sz") * F.col("sz")).alias("vz"),
     )
-    q1 = _halfup_div(F.lit(10**9).cast("decimal(38,0)") * F.col("cc"), F.col("d"))
-    r2 = _halfup_div(q1 * F.col("cc"), F.lit(1000).cast("decimal(38,0)") * F.col("vz"))
+    q1 = halfup_div(F.lit(10**9).cast("decimal(38,0)") * F.col("cc"), F.col("d"))
+    r2 = halfup_div(q1 * F.col("cc"), F.lit(1000).cast("decimal(38,0)") * F.col("vz"))
     return parts.select(
         F.col("n").cast("long").alias("n_days"),
-        _halfup_div(F.lit(1_000_000).cast("decimal(38,0)") * F.col("b"), F.col("d"))
+        halfup_div(F.lit(1_000_000).cast("decimal(38,0)") * F.col("b"), F.col("d"))
         .cast("long")
         .alias("ols_slope_micro"),
         F.when(F.col("vz") > 0, r2).cast("long").alias("bp_r2_micro"),

@@ -1,14 +1,7 @@
-"""Round-5 operator batch (formerly the banked queue).
+"""Round-5 operator batch.
 
-Built and fully gated during round 4 — when the driver's 50-slot
-evaluation window was exactly the 50 queries still awaiting external
-correctness rows, so registering these then would have displaced one —
-and ACTIVATED in round 5 once CORRECTNESS_r04 confirmed the backlog
-drained (``registry._ensure_loaded`` calls :func:`activate`).
-
-Every entry is a complete ``(name, fn, oracle, doc)``; tests
-(`tests/test_roundfive.py`) run each against its DuckDB oracle with the
-same canon/compare the driver gate uses, plus the registry-wide
+Tests (`tests/test_roundfive.py`) run each query against its DuckDB
+oracle with the same canon/compare tools/check_correctness.py uses, plus the
 SinglePartition and no-cartesian plan sweeps.
 """
 
@@ -18,37 +11,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.textnorm import whitespace_tokens
+from ..registry import register
 from ..tables import Tables
 
 _SQL_TOKENS = "string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ')"
-
-QUEUE: list[tuple] = []
-
-
-def _queued(name: str, oracle: str):
-    def deco(fn):
-        QUEUE.append((name, fn, oracle, fn.__doc__ or ""))
-        return fn
-
-    return deco
-
-
-_ACTIVATED = False
-
-
-def activate() -> None:
-    """Register every queued query (round-5 switch; idempotent —
-    ``registry._ensure_loaded`` calls this once per process, and a
-    second explicit call must not trip the duplicate-name guard)."""
-    global _ACTIVATED
-    if _ACTIVATED:
-        return
-    from ..registry import register
-
-    for name, fn, oracle, doc in QUEUE:
-        register(name, oracle=oracle, doc=doc)(fn)
-    _ACTIVATED = True
-
 
 # ---------------------------------------------------------------------------
 # 1. Temperature-scaled mixture weights (the p^alpha corpus-mixing rule)
@@ -63,7 +29,7 @@ def activate() -> None:
 MIX_ALPHA = 0.75
 
 
-@_queued(
+@register(
     "corpus_temperature_mixture",
     oracle=f"""
     WITH per_lang AS (
@@ -181,7 +147,7 @@ LDIV_BUCKET = 500  # n_chars quasi-identifier bucket width
 LDIV_L = 3
 
 
-@_queued(
+@register(
     "privacy_l_diversity_audit",
     oracle=f"""
     SELECT lang,
@@ -229,7 +195,7 @@ TOPK_K = 10
 TOPK_SHARDS = 8
 
 
-@_queued(
+@register(
     "agg_topk_mergeable",
     oracle=f"""
     SELECT o_orderkey, o_custkey,
@@ -288,7 +254,7 @@ def agg_topk_mergeable(spark: SparkSession, sf_dir: str) -> DataFrame:
 DRIFT_SPLIT = "1995-01-01"
 
 
-@_queued(
+@register(
     "dq_schema_drift",
     oracle=f"""
     WITH halves AS (
@@ -451,7 +417,7 @@ def _multiprobe_oracle() -> str:
     """
 
 
-@_queued("similarity_ann_multiprobe_topk", oracle=_multiprobe_oracle())
+@register("similarity_ann_multiprobe_topk", oracle=_multiprobe_oracle())
 def similarity_ann_multiprobe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-probe LSH: at the SELECTIVE (8 bands x 8 rows) geometry,
     each query probes its exact band signature PLUS every 1-bit flip
@@ -603,7 +569,7 @@ def _logit_parts() -> tuple[list[str], str, str, list[str]]:
     return ctes, prev_w0, prev_w1, selects
 
 
-@_queued("stats_logistic_gd", oracle=_logit_oracle())
+@register("stats_logistic_gd", oracle=_logit_oracle())
 def stats_logistic_gd(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Logistic regression (urgent-order propensity vs order value) by
     THREE fixed gradient-descent steps, as declarative plans — the
@@ -745,7 +711,7 @@ def _pq_oracle() -> str:
     """
 
 
-@_queued("embedding_pq_assign_stats", oracle=_pq_oracle())
+@register("embedding_pq_assign_stats", oracle=_pq_oracle())
 def embedding_pq_assign_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization assignment: split each 64-d vector into 4
     subspaces of 16 dims, assign each sub-vector to its nearest of 8
@@ -838,7 +804,7 @@ def embedding_pq_assign_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 ASOF_CUTOFF = "2024-01-15 00:00:00"
 
 
-@_queued(
+@register(
     "events_scd_asof_snapshot",
     oracle=f"""
     SELECT user_id, event_id AS last_event_id, event_type AS last_event_type,
@@ -888,7 +854,7 @@ def events_scd_asof_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_queued(
+@register(
     "dq_uniqueness_violations",
     oracle="""
     WITH o AS (
@@ -982,7 +948,7 @@ def _band_rows_sql() -> str:
     )
 
 
-@_queued(
+@register(
     "join_range_bucketed",
     oracle=f"""
     WITH bands AS ({_band_rows_sql()}),
@@ -1126,7 +1092,7 @@ def lpa_labels(spark: SparkSession, t: Tables, sf_dir: str) -> DataFrame:
     return labels
 
 
-@_queued("graph_label_propagation", oracle=_lpa_oracle())
+@register("graph_label_propagation", oracle=_lpa_oracle())
 def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Synchronous label propagation (2 fixed rounds) over the part
     co-purchase graph: every node starts as its own community, then
@@ -1182,7 +1148,7 @@ def _funnel_tw_oracle() -> str:
     """
 
 
-@_queued("events_funnel_time_windowed", oracle=_funnel_tw_oracle())
+@register("events_funnel_time_windowed", oracle=_funnel_tw_oracle())
 def events_funnel_time_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Time-constrained funnel: of the users who clicked, how many
     purchased WITHIN 60 minutes of their first click — the
@@ -1274,7 +1240,7 @@ def _pmi_oracle() -> str:
     """
 
 
-@_queued("text_pmi_cooccurrence", oracle=_pmi_oracle())
+@register("text_pmi_cooccurrence", oracle=_pmi_oracle())
 def text_pmi_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pointwise mutual information over document-level token
     co-occurrence — the collocation/phrase-mining primitive (which
@@ -1350,7 +1316,7 @@ def text_pmi_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
 COMPACT_TARGET_BYTES = 1 << 20  # 1 MiB target file size (chars ~ bytes proxy)
 
 
-@_queued(
+@register(
     "layout_compaction_plan",
     oracle=f"""
     SELECT source,
@@ -1415,7 +1381,7 @@ def _langid_confusion_oracle() -> str:
     """
 
 
-@_queued("text_langid_confusion", oracle=_langid_confusion_oracle())
+@register("text_langid_confusion", oracle=_langid_confusion_oracle())
 def text_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Confusion matrix of the language-ID heuristic against the
     labeled ``lang`` column: per (actual, guessed) cell, document count
@@ -1449,7 +1415,7 @@ def text_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_queued(
+@register(
     "stats_welch_anova",
     oracle="""
     WITH q AS (
@@ -1601,7 +1567,7 @@ def _sweep_oracle() -> str:
     )
 
 
-@_queued("ml_confusion_threshold_sweep", oracle=_sweep_oracle())
+@register("ml_confusion_threshold_sweep", oracle=_sweep_oracle())
 def ml_confusion_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Confusion counts and precision/recall of the hashed-feature
     quality classifier at five fixed decision thresholds — the
@@ -1694,7 +1660,7 @@ def _pareto_oracle() -> str:
     """
 
 
-@_queued("stats_pareto_by_nation", oracle=_pareto_oracle())
+@register("stats_pareto_by_nation", oracle=_pareto_oracle())
 def stats_pareto_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Revenue-concentration (Pareto/80-20) audit per nation: what
     share of each nation's order revenue comes from its top decile of
@@ -1758,7 +1724,7 @@ def stats_pareto_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
 HOURLY_TOPK = 3
 
 
-@_queued(
+@register(
     "events_hourly_topk_users",
     oracle=f"""
     WITH hourly AS (
@@ -1807,7 +1773,7 @@ def events_hourly_topk_users(spark: SparkSession, sf_dir: str) -> DataFrame:
 LATE_BUCKETS_S = [0, 60, 300, 900, 3600]  # lateness histogram edges (seconds)
 
 
-@_queued(
+@register(
     "events_late_arrival_audit",
     oracle=f"""
     WITH ordered AS (
@@ -1877,7 +1843,7 @@ def events_late_arrival_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 TRIGRAM_TOP = 15
 
 
-@_queued(
+@register(
     "text_char_trigram_profile",
     oracle=f"""
     WITH norm AS (
@@ -1938,7 +1904,7 @@ def text_char_trigram_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_queued(
+@register(
     "corpus_dedup_survivorship",
     oracle="""
     WITH hashed AS (
@@ -1995,7 +1961,7 @@ def corpus_dedup_survivorship(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_queued(
+@register(
     "lineitem_shipment_latency",
     oracle="""
     WITH lat AS (

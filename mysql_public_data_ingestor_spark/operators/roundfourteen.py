@@ -1,12 +1,8 @@
-"""Round-14 banked operator queue — built AND gated in round 13
-(same-commit rule: ``tests/test_roundfourteen.py`` carries raw-frame
-oracle parity, plan bars and Python replicas with float anchors;
-SCALE.md §5s records the ×10 ladder from this round's session).
+"""Round-14 operator batch 1.
 
-NOT imported by ``registry._ensure_loaded`` yet — the round-13 window
-carries 45 unverified names (18 activated bank + 25 direct batches
-T-X + 2 shared-derivation re-checks). ``activate()`` is the round-14
-switch (recipe at ``registry.py``, the roundthirteen precedent).
+Gates: raw-frame oracle parity, plan bars and Python replicas with
+float anchors in ``tests/test_roundfourteen.py``; SCALE.md §5s
+records the ×10 ladder.
 
 Batch theme — spectral shape, distributed sketch guarantees, weighted
 graph mixing, forensic data quality, range-based volatility and
@@ -28,35 +24,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.exact import dec38, halfup_div, sql_halfup_div
+from ..registry import register
 from ..tables import Tables
-from .roundeleven import _dec, _halfup_div, _sql_halfup_div
 from .roundthirteen7 import LN2_MICRO
-
-QUEUE: list[tuple] = []
-
-
-def _queued(name: str, oracle: str):
-    def deco(fn):
-        QUEUE.append((name, fn, oracle, fn.__doc__ or ""))
-        return fn
-
-    return deco
-
-
-_ACTIVATED = False
-
-
-def activate() -> None:
-    """Register every queued query (round-14 switch; idempotent)."""
-    global _ACTIVATED
-    if _ACTIVATED:
-        return
-    from ..registry import register
-
-    for name, fn, oracle, doc in QUEUE:
-        register(name, oracle=oracle, doc=doc)(fn)
-    _ACTIVATED = True
-
 
 # ---------------------------------------------------------------------------
 # 1. Wiener (log-)spectral flatness of the STL remainder
@@ -87,7 +58,7 @@ def _flatness_oracle() -> str:
       SELECT CAST(count(*) AS HUGEINT) AS m, CAST(sum(r) AS HUGEINT) AS sr
       FROM rem0
     ), rbar AS (
-      SELECT m, {_sql_halfup_div('sr', 'm')} AS rb FROM rtot
+      SELECT m, {sql_halfup_div('sr', 'm')} AS rb FROM rtot
     ), cent AS (
       SELECT CAST(r0.k AS BIGINT) AS k, (r0.r - rb.rb) AS z
       FROM rem0 r0, rbar rb
@@ -100,8 +71,8 @@ def _flatness_oracle() -> str:
     gm AS (
       SELECT CAST(count(*) AS HUGEINT) AS kk,
              CAST(sum(lnp) AS HUGEINT) AS slnp,
-             {_sql_halfup_div('CAST(sum(p) AS HUGEINT)', str(k))} AS pbar,
-             CAST({_sql_halfup_div('CAST(sum(p) AS HUGEINT)', str(k))}
+             {sql_halfup_div('CAST(sum(p) AS HUGEINT)', str(k))} AS pbar,
+             CAST({sql_halfup_div('CAST(sum(p) AS HUGEINT)', str(k))}
                   AS DOUBLE) AS pbar_dbl,
              first(period ORDER BY p DESC, period ASC) AS dominant_period
       FROM lnp_rel
@@ -112,14 +83,14 @@ def _flatness_oracle() -> str:
     )
     SELECT CAST(m AS BIGINT) AS n_resid_days,
            CAST(kk AS BIGINT) AS n_periods,
-           CAST({_sql_halfup_div('slnp', 'kk')} - lnbar AS BIGINT)
+           CAST({sql_halfup_div('slnp', 'kk')} - lnbar AS BIGINT)
              AS ln_flatness_micro,
            CAST(dominant_period AS BIGINT) AS dominant_period
     FROM r
     """
 
 
-@_queued("events_spectral_flatness_residual", _flatness_oracle())
+@register("events_spectral_flatness_residual", _flatness_oracle())
 def events_spectral_flatness_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Wiener spectral flatness (in the log domain) of the STL-lite
     remainder over the fixed calendar periods: ln SFM = mean_p ln P_p
@@ -151,8 +122,8 @@ def events_spectral_flatness_residual(spark: SparkSession, sf_dir: str) -> DataF
 
     t = Tables(spark, sf_dir)
     rem = _stl_rem(t).select("k", "r")
-    rtot = rem.agg(_dec(F.count(F.lit(1))).alias("m"), F.sum("r").alias("sr"))
-    rbar = rtot.select("m", _halfup_div(F.col("sr"), F.col("m")).alias("rb"))
+    rtot = rem.agg(dec38(F.count(F.lit(1))).alias("m"), F.sum("r").alias("sr"))
+    rbar = rtot.select("m", halfup_div(F.col("sr"), F.col("m")).alias("rb"))
     cent = rem.crossJoin(F.broadcast(rbar)).select(
         F.col("k").cast("long").alias("k"), (F.col("r") - F.col("rb")).alias("z"),
         "m",
@@ -199,7 +170,7 @@ def events_spectral_flatness_residual(spark: SparkSession, sf_dir: str) -> DataF
     gm = pw.agg(
         F.count(F.lit(1)).cast("long").alias("kk"),
         F.sum("lnp").alias("slnp"),
-        _halfup_div(F.sum("p"), F.lit(kk).cast("decimal(38,0)")).alias("pbar"),
+        halfup_div(F.sum("p"), F.lit(kk).cast("decimal(38,0)")).alias("pbar"),
         F.min_by(
             "period", F.struct((-F.col("p")).alias("a"), F.col("period").alias("b"))
         ).alias("dominant_period"),
@@ -210,7 +181,7 @@ def events_spectral_flatness_residual(spark: SparkSession, sf_dir: str) -> DataF
         F.col("m").cast("long").alias("n_resid_days"),
         F.col("kk").alias("n_periods"),
         (
-            _halfup_div(_dec(F.col("slnp")), _dec(F.col("kk"))).cast("long") - lnbar
+            halfup_div(dec38(F.col("slnp")), dec38(F.col("kk"))).cast("long") - lnbar
         ).alias("ln_flatness_micro"),
         F.col("dominant_period").cast("long").alias("dominant_period"),
     )
@@ -226,7 +197,7 @@ STK_GLOBAL_K = 10
 
 
 def _shard_topk_oracle() -> str:
-    hd = _sql_halfup_div
+    hd = sql_halfup_div
     return f"""
     WITH base AS (
       SELECT l_partkey AS item,
@@ -272,7 +243,7 @@ def _shard_topk_oracle() -> str:
     """
 
 
-@_queued("sketch_shard_topk_coverage_audit", _shard_topk_oracle())
+@register("sketch_shard_topk_coverage_audit", _shard_topk_oracle())
 def sketch_shard_topk_coverage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Coverage audit of the shard-parallel heavy-hitter pattern: each
     of 8 hash shards (sha256 of the order key — rows of one order
@@ -389,7 +360,7 @@ def _strength_assort_oracle() -> str:
     """
 
 
-@_queued("graph_strength_assortativity", _strength_assort_oracle())
+@register("graph_strength_assortativity", _strength_assort_oracle())
 def graph_strength_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Strength (weighted-degree) assortativity of the co-purchase
     graph: the Pearson correlation of endpoint STRENGTHS over the
@@ -429,7 +400,7 @@ def graph_strength_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
         wedges.select(F.col("u").alias("node"), "w")
         .unionAll(wedges.select(F.col("v").alias("node"), "w"))
         .groupBy("node")
-        .agg(F.sum(_dec(F.col("w"))).alias("s"))
+        .agg(F.sum(dec38(F.col("w"))).alias("s"))
     )
     su = strength.select(F.col("node").alias("u"), F.col("s").alias("s_u"))
     sv = strength.select(F.col("node").alias("v"), F.col("s").alias("s_v"))
@@ -438,7 +409,7 @@ def graph_strength_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("s_u").alias("sx"), F.col("s_v").alias("sy")
     ).unionAll(both.select(F.col("s_v").alias("sx"), F.col("s_u").alias("sy")))
     agg = ends.agg(
-        _dec(F.count(F.lit(1))).alias("m"),
+        dec38(F.count(F.lit(1))).alias("m"),
         F.sum("sx").alias("sxs"),
         F.sum(F.col("sx") * F.col("sy")).alias("sxy"),
         F.sum(F.col("sx") * F.col("sx")).alias("sxx"),
@@ -461,7 +432,7 @@ def graph_strength_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _whipple_oracle() -> str:
-    hd = _sql_halfup_div
+    hd = sql_halfup_div
     return f"""
     WITH q AS (
       SELECT CAST(l_quantity AS BIGINT) AS v FROM lineitem
@@ -487,7 +458,7 @@ def _whipple_oracle() -> str:
     """
 
 
-@_queued("dq_whipple_heaping_index", _whipple_oracle())
+@register("dq_whipple_heaping_index", _whipple_oracle())
 def dq_whipple_heaping_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Whipple index of terminal-digit heaping on lineitem quantities:
     W = 5 x (share of values ending in 0 or 5) — the demographer's
@@ -511,7 +482,7 @@ def dq_whipple_heaping_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         t.lineitem.filter(F.col("l_quantity").isNotNull())
         .select((F.col("l_quantity").cast("long") % 10).alias("digit"))
         .groupBy("digit")
-        .agg(_dec(F.count(F.lit(1))).alias("n_d"))
+        .agg(dec38(F.count(F.lit(1))).alias("n_d"))
     )
     s = d.agg(
         F.sum("n_d").alias("n"),
@@ -525,12 +496,12 @@ def dq_whipple_heaping_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n").cast("long").alias("n"),
         F.col("n_mult5").cast("long").alias("n_mult5"),
         "n_digits",
-        _halfup_div(
+        halfup_div(
             F.lit(5_000_000).cast("decimal(38,0)") * F.col("n_mult5"), F.col("n")
         )
         .cast("long")
         .alias("whipple_micro"),
-        _halfup_div(
+        halfup_div(
             F.lit(1000).cast("decimal(38,0)")
             * (F.lit(10).cast("decimal(38,0)") * F.col("sq")
                - F.col("n") * F.col("n")),
@@ -567,13 +538,13 @@ def _parkinson_oracle() -> str:
       FROM lnl_rel
     )
     SELECT CAST(n AS BIGINT) AS n_days,
-           CAST({_sql_halfup_div('sd2', f'4::HUGEINT * {LN2_MICRO} * n')}
+           CAST({sql_halfup_div('sd2', f'4::HUGEINT * {LN2_MICRO} * n')}
                 AS BIGINT) AS parkinson_var_micro
     FROM terms
     """
 
 
-@_queued("events_parkinson_volatility_daily", _parkinson_oracle())
+@register("events_parkinson_volatility_daily", _parkinson_oracle())
 def events_parkinson_volatility_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Parkinson (1980) range-based volatility of the hourly event
     intensity: sigma^2_P = (1 / (4 ln 2)) x mean over days of
@@ -608,12 +579,12 @@ def events_parkinson_volatility_daily(spark: SparkSession, sf_dir: str) -> DataF
         F.col("lo").cast("double")
     )
     terms = hl.select(dterm.alias("dln")).agg(
-        _dec(F.count(F.lit(1))).alias("n"),
-        F.sum(_dec(F.col("dln")) * F.col("dln")).alias("sd2"),
+        dec38(F.count(F.lit(1))).alias("n"),
+        F.sum(dec38(F.col("dln")) * F.col("dln")).alias("sd2"),
     )
     return terms.select(
         F.col("n").cast("long").alias("n_days"),
-        _halfup_div(
+        halfup_div(
             F.col("sd2"),
             F.lit(4 * LN2_MICRO).cast("decimal(38,0)") * F.col("n"),
         )
@@ -630,7 +601,7 @@ def events_parkinson_volatility_daily(spark: SparkSession, sf_dir: str) -> DataF
 def _hapax_growth_oracle() -> str:
     from .roundthirteen6 import _SQL_FREQ_SPECTRUM
 
-    hd = _sql_halfup_div
+    hd = sql_halfup_div
     half_spectrum = _SQL_FREQ_SPECTRUM.replace(
         "FROM documents", "FROM documents WHERE doc_id % 2 = 0"
     ).replace(" toks AS (", " htoks AS (").replace(
@@ -660,7 +631,7 @@ def _hapax_growth_oracle() -> str:
     """
 
 
-@_queued("corpus_hapax_growth_audit", _hapax_growth_oracle())
+@register("corpus_hapax_growth_audit", _hapax_growth_oracle())
 def corpus_hapax_growth_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LNRE hapax-growth audit per language: the hapax share V1/V on a
     deterministic half corpus (doc_id % 2 = 0) vs the full corpus. For
@@ -697,15 +668,15 @@ def corpus_hapax_growth_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("c"))
     )
     half = half_tf.groupBy("lang").agg(
-        F.sum(_dec(F.col("c"))).alias("n_tokens_h"),
-        _dec(F.count(F.lit(1))).alias("vocab_h"),
+        F.sum(dec38(F.col("c"))).alias("n_tokens_h"),
+        dec38(F.count(F.lit(1))).alias("vocab_h"),
         F.sum(F.when(F.col("c") == 1, 1).otherwise(0))
         .cast("decimal(38,0)")
         .alias("v1_h"),
     )
     m6 = F.lit(1_000_000).cast("decimal(38,0)")
-    full_share = _halfup_div(m6 * F.col("v1"), F.col("vocab"))
-    half_share = _halfup_div(m6 * F.col("v1_h"), F.col("vocab_h"))
+    full_share = halfup_div(m6 * F.col("v1"), F.col("vocab"))
+    half_share = halfup_div(m6 * F.col("v1_h"), F.col("vocab_h"))
     return (
         full.join(half, "lang")
         .select(

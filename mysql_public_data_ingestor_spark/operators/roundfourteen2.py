@@ -1,8 +1,7 @@
-"""Round-14 banked operator queue, batch 2 — built AND gated in round
-13 (same-commit rule: ``tests/test_roundfourteen2.py``; SCALE.md §5s
-records the ×10 ladder). NOT imported by ``registry._ensure_loaded``
-yet; ``activate()`` is the round-14 switch (flip together with
-``roundfourteen.activate()``).
+"""Round-14 operator batch 2.
+
+Gates: ``tests/test_roundfourteen2.py``; SCALE.md §5s records the
+×10 ladder.
 
 Batch theme — optimal thresholding, distributional shift, rank
 stability and sketch error: Otsu's between-class-variance threshold on
@@ -23,34 +22,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.exact import dec38, halfup_div, sql_halfup_div
+from ..registry import register
 from ..tables import Tables
-from .roundeleven import _dec, _halfup_div, _sql_halfup_div
-
-QUEUE: list[tuple] = []
-
-
-def _queued(name: str, oracle: str):
-    def deco(fn):
-        QUEUE.append((name, fn, oracle, fn.__doc__ or ""))
-        return fn
-
-    return deco
-
-
-_ACTIVATED = False
-
-
-def activate() -> None:
-    """Register every queued query (round-14 switch; idempotent)."""
-    global _ACTIVATED
-    if _ACTIVATED:
-        return
-    from ..registry import register
-
-    for name, fn, oracle, doc in QUEUE:
-        register(name, oracle=oracle, doc=doc)(fn)
-    _ACTIVATED = True
-
 
 # ---------------------------------------------------------------------------
 # 1. Otsu threshold on the daily-count histogram
@@ -60,7 +34,7 @@ def activate() -> None:
 def _otsu_oracle() -> str:
     from .roundeleven2 import _SQL_DAILY_COUNTS_IDX
 
-    hd = _sql_halfup_div
+    hd = sql_halfup_div
     return f"""
     WITH {_SQL_DAILY_COUNTS_IDX.strip()}
     , vals AS (
@@ -95,7 +69,7 @@ def _otsu_oracle() -> str:
     """
 
 
-@_queued("events_otsu_threshold_daily", _otsu_oracle())
+@register("events_otsu_threshold_daily", _otsu_oracle())
 def events_otsu_threshold_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Otsu's optimal threshold (Otsu 1979) on the daily order-count
     histogram: the cut that maximizes the between-class variance
@@ -124,7 +98,7 @@ def events_otsu_threshold_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     t = Tables(spark, sf_dir)
     idx = _daily_counts_idx(t)
-    vals = idx.groupBy(F.col("y").alias("v")).agg(_dec(F.count(F.lit(1))).alias("c"))
+    vals = idx.groupBy(F.col("y").alias("v")).agg(dec38(F.count(F.lit(1))).alias("c"))
     tot = vals.agg(
         F.sum("c").alias("n"),
         F.sum(F.col("v") * F.col("c")).alias("s"),
@@ -149,7 +123,7 @@ def events_otsu_threshold_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n0",
         n1.alias("n1"),
         "n",
-        _halfup_div(m6 * d * d, F.col("n0") * n1 * vt).alias("eta"),
+        halfup_div(m6 * d * d, F.col("n0") * n1 * vt).alias("eta"),
     )
     best = cand.orderBy(F.col("eta").desc(), F.col("v").asc()).limit(1)
     return best.select(
@@ -203,7 +177,7 @@ def _shift_oracle() -> str:
     """
 
 
-@_queued("stats_quantile_shift_function", _shift_oracle())
+@register("stats_quantile_shift_function", _shift_oracle())
 def stats_quantile_shift_function(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Doksum's quantile shift function (Doksum 1974) for lineitem
     quantity, returned (A) vs refused (R): Delta(p) = q_R(p) - q_A(p)
@@ -236,8 +210,8 @@ def stats_quantile_shift_function(spark: SparkSession, sf_dir: str) -> DataFrame
         )
         .groupBy("v")
         .agg(
-            F.sum(_dec(F.col("ia"))).alias("na_v"),
-            F.sum(_dec(F.col("ir"))).alias("nr_v"),
+            F.sum(dec38(F.col("ia"))).alias("na_v"),
+            F.sum(dec38(F.col("ir"))).alias("nr_v"),
         )
         .localCheckpoint(eager=True)  # <= 50 rows; three consumers
     )
@@ -336,7 +310,7 @@ def _rank_stability_oracle() -> str:
     """
 
 
-@_queued("stats_nation_rank_stability_tau", _rank_stability_oracle())
+@register("stats_nation_rank_stability_tau", _rank_stability_oracle())
 def stats_nation_rank_stability_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-year rank stability of nation revenue: Kendall tau-b
     between the per-nation order revenue rankings of the last two
@@ -384,7 +358,7 @@ def stats_nation_rank_stability_tau(spark: SparkSession, sf_dir: str) -> DataFra
             F.col("n_nationkey") == F.col("c_nationkey"),
         )
         .groupBy(F.col("n_name").alias("nation"), "yy", "y1")
-        .agg(F.sum(_dec(F.col("cents"))).alias("r"))
+        .agg(F.sum(dec38(F.col("cents"))).alias("r"))
     )
     a = rev.filter(F.col("yy") == F.col("y1") - 1).select(
         "nation", F.col("r").alias("r0"), "y1"
@@ -424,7 +398,7 @@ def stats_nation_rank_stability_tau(spark: SparkSession, sf_dir: str) -> DataFra
         F.sum(F.when(F.col("r1") == F.col("r1_2"), 1).otherwise(0))
         .cast("decimal(38,0)")
         .alias("ty"),
-        _dec(F.count(F.lit(1))).alias("n0"),
+        dec38(F.count(F.lit(1))).alias("n0"),
         F.first("y1").alias("y1"),
     )
     nn = wide.agg(F.count(F.lit(1)).cast("long").alias("n_nations"))
@@ -454,7 +428,7 @@ def stats_nation_rank_stability_tau(spark: SparkSession, sf_dir: str) -> DataFra
 def _cm_error_oracle() -> str:
     from .sketches import CM_SEEDS, CM_W, _sql_uhash
 
-    hd = _sql_halfup_div
+    hd = sql_halfup_div
     cells = " UNION ALL ".join(
         f"SELECT {j} AS depth, {_sql_uhash('user_id', a, b, CM_W)} AS bucket, "
         "count(*) AS c FROM ev GROUP BY 1, 2"
@@ -502,7 +476,7 @@ def _cm_error_oracle() -> str:
     """
 
 
-@_queued("sketch_countmin_error_profile", _cm_error_oracle())
+@register("sketch_countmin_error_profile", _cm_error_oracle())
 def sketch_countmin_error_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full-population error profile of the Count-Min sketch (depth 4
     x width 512, the production ``sketch_countmin_heavy_hitters``
@@ -580,7 +554,7 @@ def sketch_countmin_error_profile(spark: SparkSession, sf_dir: str) -> DataFrame
         .select((F.col("cm") - F.col("exact_n")).cast("long").alias("o"))
         .localCheckpoint(eager=False)  # user-sized; three consumers
     )
-    og = ov.groupBy("o").agg(_dec(F.count(F.lit(1))).alias("c"))
+    og = ov.groupBy("o").agg(dec38(F.count(F.lit(1))).alias("c"))
     ob = og.select(F.col("o").alias("o_b"), F.col("c").alias("c_b"))
     ocum = (
         og.join(F.broadcast(ob), F.col("o_b") <= F.col("o"))
@@ -588,11 +562,11 @@ def sketch_countmin_error_profile(spark: SparkSession, sf_dir: str) -> DataFrame
         .agg(F.sum("c_b").alias("cum"))
     )
     s = ov.agg(
-        _dec(F.count(F.lit(1))).alias("n"),
+        dec38(F.count(F.lit(1))).alias("n"),
         F.sum(F.when(F.col("o") == 0, 1).otherwise(0))
         .cast("decimal(38,0)")
         .alias("n_exact"),
-        F.sum(_dec(F.col("o"))).alias("so"),
+        F.sum(dec38(F.col("o"))).alias("so"),
         F.max("o").alias("mx"),
     )
     p90 = (
@@ -607,10 +581,10 @@ def sketch_countmin_error_profile(spark: SparkSession, sf_dir: str) -> DataFrame
     k3 = F.lit(1000).cast("decimal(38,0)")
     return s.crossJoin(F.broadcast(p90)).select(
         F.col("n").cast("long").alias("n_users"),
-        _halfup_div(m6 * F.col("n_exact"), F.col("n")).cast("long").alias(
+        halfup_div(m6 * F.col("n_exact"), F.col("n")).cast("long").alias(
             "exact_ppm"
         ),
-        _halfup_div(k3 * F.col("so"), F.col("n")).cast("long").alias(
+        halfup_div(k3 * F.col("so"), F.col("n")).cast("long").alias(
             "mean_overcount_milli"
         ),
         F.col("p90").cast("long").alias("p90_overcount"),

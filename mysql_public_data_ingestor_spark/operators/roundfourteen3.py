@@ -1,8 +1,7 @@
-"""Round-14 banked operator queue, batch 3 — built AND gated in round
-13 (same-commit rule: ``tests/test_roundfourteen3.py``; SCALE.md §5s
-records the ×10 ladder). NOT imported by ``registry._ensure_loaded``
-yet; ``activate()`` is the round-14 switch (flip together with
-``roundfourteen.activate()`` / ``roundfourteen2.activate()``).
+"""Round-14 operator batch 3.
+
+Gates: ``tests/test_roundfourteen3.py``; SCALE.md §5s records the
+×10 ladder.
 
 Batch theme — the utility side of anonymization and the
 prevalence-honest side of operating points: the generalization
@@ -23,34 +22,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.exact import dec38, halfup_div, sql_halfup_div
+from ..registry import register
 from ..tables import Tables
-from .roundeleven import _dec, _halfup_div, _sql_halfup_div
-
-QUEUE: list[tuple] = []
-
-
-def _queued(name: str, oracle: str):
-    def deco(fn):
-        QUEUE.append((name, fn, oracle, fn.__doc__ or ""))
-        return fn
-
-    return deco
-
-
-_ACTIVATED = False
-
-
-def activate() -> None:
-    """Register every queued query (round-14 switch; idempotent)."""
-    global _ACTIVATED
-    if _ACTIVATED:
-        return
-    from ..registry import register
-
-    for name, fn, oracle, doc in QUEUE:
-        register(name, oracle=oracle, doc=doc)(fn)
-    _ACTIVATED = True
-
 
 # ---------------------------------------------------------------------------
 # 1. Generalization information-loss audit (nation -> region)
@@ -58,7 +32,7 @@ def activate() -> None:
 
 
 def _info_loss_oracle() -> str:
-    hd = _sql_halfup_div
+    hd = sql_halfup_div
     return f"""
     WITH base AS (
       SELECT c.c_custkey, n.n_nationkey AS nat, n.n_regionkey AS reg,
@@ -102,7 +76,7 @@ def _info_loss_oracle() -> str:
     """
 
 
-@_queued("privacy_generalization_info_loss", _info_loss_oracle())
+@register("privacy_generalization_info_loss", _info_loss_oracle())
 def privacy_generalization_info_loss(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Information-loss audit of the standard anonymization move for
     the (nation, market-segment) quasi-identifier: generalize nation
@@ -136,17 +110,17 @@ def privacy_generalization_info_loss(spark: SparkSession, sf_dir: str) -> DataFr
         F.col("n_regionkey").alias("reg"),
         F.col("c_mktsegment").alias("seg"),
     )
-    raw = base.groupBy("nat", "seg").agg(_dec(F.count(F.lit(1))).alias("c"))
-    gen = base.groupBy("reg", "seg").agg(_dec(F.count(F.lit(1))).alias("c"))
+    raw = base.groupBy("nat", "seg").agg(dec38(F.count(F.lit(1))).alias("c"))
+    gen = base.groupBy("reg", "seg").agg(dec38(F.count(F.lit(1))).alias("c"))
     natreg = t.nation.groupBy(F.col("n_regionkey").alias("reg")).agg(
-        _dec(F.count(F.lit(1))).alias("n_nat")
+        dec38(F.count(F.lit(1))).alias("n_nat")
     )
-    tot = base.agg(_dec(F.count(F.lit(1))).alias("n")).crossJoin(
-        F.broadcast(t.nation.agg(_dec(F.count(F.lit(1))).alias("n_nations")))
+    tot = base.agg(dec38(F.count(F.lit(1))).alias("n")).crossJoin(
+        F.broadcast(t.nation.agg(dec38(F.count(F.lit(1))).alias("n_nations")))
     )
     ncp = (
         base.groupBy("reg")
-        .agg(_dec(F.count(F.lit(1))).alias("cnt"))
+        .agg(dec38(F.count(F.lit(1))).alias("cnt"))
         .join(F.broadcast(natreg), "reg")
         .agg(F.sum(F.col("cnt") * (F.col("n_nat") - 1)).alias("ncp_num"))
     )
@@ -173,7 +147,7 @@ def privacy_generalization_info_loss(spark: SparkSession, sf_dir: str) -> DataFr
             F.col("dm_gen").cast("long").alias("dm_gen"),
             "min_class_raw",
             "min_class_gen",
-            _halfup_div(
+            halfup_div(
                 m6 * F.col("ncp_num"), F.col("n") * (F.col("n_nations") - 1)
             )
             .cast("long")
@@ -191,7 +165,7 @@ def _prg_oracle() -> str:
     from .ml import _scored_labeled_sql
     from .roundthirteen7 import PRECISION_FLOORS
 
-    hd = _sql_halfup_div
+    hd = sql_halfup_div
     floors = ", ".join(f"({n}, {d})" for n, d in PRECISION_FLOORS)
     return (
         _scored_labeled_sql()
@@ -237,7 +211,7 @@ def _prg_oracle() -> str:
     )
 
 
-@_queued("ml_prg_at_operating_points", _prg_oracle())
+@register("ml_prg_at_operating_points", _prg_oracle())
 def ml_prg_at_operating_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Precision-recall GAIN (Flach & Kull, NeurIPS 2015) at the
     deployed precision-floor operating points: precG = (prec - pi) /
@@ -295,13 +269,13 @@ def ml_prg_at_operating_points(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("pn", "pd", "v", "n_sel", "tp")
     )
     m6 = F.lit(1_000_000).cast("decimal(38,0)")
-    den = _dec(F.col("tp")) * _dec(F.col("nn") - F.col("p"))
-    prec_g = _halfup_div(
-        m6 * (_dec(F.col("tp")) * F.col("nn") - _dec(F.col("p")) * F.col("n_sel")),
+    den = dec38(F.col("tp")) * dec38(F.col("nn") - F.col("p"))
+    prec_g = halfup_div(
+        m6 * (dec38(F.col("tp")) * F.col("nn") - dec38(F.col("p")) * F.col("n_sel")),
         den,
     )
-    rec_g = _halfup_div(
-        m6 * (_dec(F.col("tp")) * F.col("nn") - _dec(F.col("p")) * F.col("p")),
+    rec_g = halfup_div(
+        m6 * (dec38(F.col("tp")) * F.col("nn") - dec38(F.col("p")) * F.col("p")),
         den,
     )
     ok = F.col("v").isNotNull() & (F.col("tp") > 0)

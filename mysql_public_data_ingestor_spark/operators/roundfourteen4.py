@@ -37,9 +37,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.exact import dec38, halfup_div, sql_halfup_div
 from ..registry import register
 from ..tables import Tables
-from .roundeleven import _dec, _halfup_div, _sql_halfup_div
 
 # ---------------------------------------------------------------------------
 # 1. Strength-weighted PageRank, 6 unrolled integer-micro iterations
@@ -297,7 +297,7 @@ def graph_square_count_c4(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.when(F.col("c") >= 2, F.col("m")).otherwise(0))
         .cast("long")
         .alias("n_pairs_cn2"),
-        F.sum(_dec(F.col("m")) * _dec(F.col("c") * (F.col("c") - 1) / 2)).alias(
+        F.sum(dec38(F.col("m")) * dec38(F.col("c") * (F.col("c") - 1) / 2)).alias(
             "sum_c2"
         ),
         F.max("c").alias("max_cn"),
@@ -342,7 +342,7 @@ def _cn_count_hist(batches):
 def _bridges_oracle() -> str:
     from .graph import _SQL_TRI_CTES
 
-    hd = _sql_halfup_div
+    hd = sql_halfup_div
     return (
         _SQL_TRI_CTES
         + f"""
@@ -425,10 +425,10 @@ def graph_local_bridges_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         flagged.groupBy("is_bridge")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_edges"),
-            _halfup_div(m6 * F.sum(_dec(F.col("mn"))), _dec(F.count(F.lit(1))))
+            halfup_div(m6 * F.sum(dec38(F.col("mn"))), dec38(F.count(F.lit(1))))
             .cast("long")
             .alias("mean_min_deg_micro"),
-            _halfup_div(m6 * F.sum(_dec(F.col("mx"))), _dec(F.count(F.lit(1))))
+            halfup_div(m6 * F.sum(dec38(F.col("mx"))), dec38(F.count(F.lit(1))))
             .cast("long")
             .alias("mean_max_deg_micro"),
         )
@@ -446,7 +446,7 @@ def _pav_diagram_oracle() -> str:
     from .roundten3 import ISO_BINS, _sql_iso_fit_ctes
 
     width = 10000 // ISO_BINS
-    hd = _sql_halfup_div
+    hd = sql_halfup_div
     return (
         _scored_labeled_sql()
         + ", "
@@ -523,7 +523,7 @@ def ml_pav_reliability_diagram(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).agg(
         F.count(F.lit(1)).alias("n"),
         F.sum("label").alias("pos"),
-        F.sum(_dec(F.col("score_q"))).alias("ssum"),
+        F.sum(dec38(F.col("score_q"))).alias("ssum"),
     )
     stats = stats.localCheckpoint(eager=True)
     fit = _iso_fit(stats.select("bin", "n", "pos"))
@@ -531,15 +531,15 @@ def ml_pav_reliability_diagram(spark: SparkSession, sf_dir: str) -> DataFrame:
         fit.join(stats.select("bin", "ssum"), "bin")
         .groupBy("v")
         .agg(
-            F.sum(_dec(F.col("n"))).alias("n_b"),
-            F.sum(_dec(F.col("pos"))).alias("pos_b"),
+            F.sum(dec38(F.col("n"))).alias("n_b"),
+            F.sum(dec38(F.col("pos"))).alias("pos_b"),
             F.sum(F.col("ssum")).alias("ssum_b"),
         )
     )
     m6 = F.lit(1_000_000).cast("decimal(38,0)")
     c100 = F.lit(100).cast("decimal(38,0)")
-    fitted = _halfup_div(m6 * F.col("pos_b"), F.col("n_b"))
-    mean_s = _halfup_div(c100 * F.col("ssum_b"), F.col("n_b"))
+    fitted = halfup_div(m6 * F.col("pos_b"), F.col("n_b"))
+    mean_s = halfup_div(c100 * F.col("ssum_b"), F.col("n_b"))
     return (
         blocks.select(
             fitted.cast("long").alias("fitted_micro"),
@@ -560,7 +560,7 @@ def _chao_shen_oracle() -> str:
     from ..functions.detmath import sql_det_ln_steps, sql_det_pow_steps
     from .roundthirteen6 import _SQL_FREQ_SPECTRUM
 
-    hd = _sql_halfup_div
+    hd = sql_halfup_div
     return f"""
     WITH {_SQL_FREQ_SPECTRUM.strip()}
     , grid AS (
@@ -695,15 +695,15 @@ def corpus_chao_shen_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
         "lang",
         F.col("n").alias("n_tokens"),
         "vocab",
-        (F.lit(1_000_000) - _halfup_div(m6 * _dec(F.col("v1")), _dec(F.col("n"))))
+        (F.lit(1_000_000) - halfup_div(m6 * dec38(F.col("v1")), dec38(F.col("n"))))
         .cast("long")
         .alias("coverage_micro"),
         "h_plugin_nano",
         (
             F.col("h_plugin_nano")
-            + _halfup_div(
-                g9 * _dec(F.col("vocab") - 1),
-                F.lit(2).cast("decimal(38,0)") * _dec(F.col("n")),
+            + halfup_div(
+                g9 * dec38(F.col("vocab") - 1),
+                F.lit(2).cast("decimal(38,0)") * dec38(F.col("n")),
             ).cast("long")
         ).alias("h_mm_nano"),
         F.col("h_cs_nano").alias("h_chao_shen_nano"),
@@ -720,7 +720,7 @@ EMB_Q = 1_000_000  # per-element embedding quantization for the exact dot
 def _mantel_oracle() -> str:
     from .dedup import _SQL_SHINGLES
 
-    hd = _sql_halfup_div
+    hd = sql_halfup_div
     return f"""
     WITH norm AS (
 {_SQL_SHINGLES}
@@ -834,7 +834,7 @@ def dedup_mantel_jaccard_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     inter = F.col("inter")
     union = F.col("sa") + F.col("sb") - inter
     m6 = F.lit(1_000_000).cast("decimal(38,0)")
-    xdist = (F.lit(1_000_000) - _halfup_div(m6 * _dec(inter), _dec(union))).cast("long")
+    xdist = (F.lit(1_000_000) - halfup_div(m6 * dec38(inter), dec38(union))).cast("long")
     dot = F.aggregate(
         F.zip_with(F.col("qa"), F.col("qb"), lambda p_, q_: p_ * q_),
         F.lit(0).cast("long"),
@@ -852,12 +852,12 @@ def dedup_mantel_jaccard_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(xdist.alias("x"), ydist.alias("y"))
     )
     s = pairs.agg(
-        _dec(F.count(F.lit(1))).alias("n"),
-        F.sum(_dec(F.col("x"))).alias("sx"),
-        F.sum(_dec(F.col("y"))).alias("sy"),
-        F.sum(_dec(F.col("x")) * _dec(F.col("x"))).alias("sxx"),
-        F.sum(_dec(F.col("y")) * _dec(F.col("y"))).alias("syy"),
-        F.sum(_dec(F.col("x")) * _dec(F.col("y"))).alias("sxy"),
+        dec38(F.count(F.lit(1))).alias("n"),
+        F.sum(dec38(F.col("x"))).alias("sx"),
+        F.sum(dec38(F.col("y"))).alias("sy"),
+        F.sum(dec38(F.col("x")) * dec38(F.col("x"))).alias("sxx"),
+        F.sum(dec38(F.col("y")) * dec38(F.col("y"))).alias("syy"),
+        F.sum(dec38(F.col("x")) * dec38(F.col("y"))).alias("sxy"),
     )
     num = F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")
     dx = F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
@@ -867,8 +867,8 @@ def dedup_mantel_jaccard_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return s.select(
         F.col("n").cast("long").alias("n_pairs"),
-        _halfup_div(F.col("sx"), F.col("n")).cast("long").alias("mean_jac_dist_micro"),
-        _halfup_div(F.col("sy"), F.col("n")).cast("long").alias("mean_cos_dist_micro"),
+        halfup_div(F.col("sx"), F.col("n")).cast("long").alias("mean_jac_dist_micro"),
+        halfup_div(F.col("sy"), F.col("n")).cast("long").alias("mean_cos_dist_micro"),
         F.when(
             (dx > 0) & (dy > 0),
             F.floor(r * F.lit(1_000_000.0) + F.lit(0.5)).cast("long"),

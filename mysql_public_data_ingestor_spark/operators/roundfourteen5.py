@@ -34,9 +34,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.exact import dec38, halfup_div, sql_halfup_div
 from ..registry import register
 from ..tables import Tables
-from .roundeleven import _dec, _halfup_div, _sql_halfup_div
 
 # ---------------------------------------------------------------------------
 # shared: the three-gate pass-count sufficient sums (n, SL, SLL)
@@ -88,9 +88,9 @@ def _gate_sums(t: Tables) -> DataFrame:
         F.size(F.split(F.col("text"), "\\.", -1)) - 1 >= COCHRAN_MIN_SENTENCES, 1
     ).otherwise(0)
     return t.documents.select((a + b + c).alias("l")).agg(
-        _dec(F.count(F.lit(1))).alias("n"),
-        _dec(F.sum("l")).alias("sl"),
-        _dec(F.sum(F.col("l") * F.col("l"))).alias("sll"),
+        dec38(F.count(F.lit(1))).alias("n"),
+        dec38(F.sum("l")).alias("sl"),
+        dec38(F.sum(F.col("l") * F.col("l"))).alias("sll"),
     )
 
 
@@ -308,10 +308,10 @@ def stats_jarque_bera_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("long").alias("y")
     )
     s1 = daily.agg(
-        _dec(F.count(F.lit(1))).alias("n"), F.sum(_dec(F.col("y"))).alias("sy")
+        dec38(F.count(F.lit(1))).alias("n"), F.sum(dec38(F.col("y"))).alias("sy")
     )
     piv = s1.select(
-        "n", "sy", _halfup_div(F.col("sy"), F.col("n")).alias("m")
+        "n", "sy", halfup_div(F.col("sy"), F.col("n")).alias("m")
     )
     d = (
         daily.crossJoin(F.broadcast(piv))
@@ -319,7 +319,7 @@ def stats_jarque_bera_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n",
             "sy",
             "m",
-            (_dec(F.col("y")) - F.col("m")).alias("dv"),
+            (dec38(F.col("y")) - F.col("m")).alias("dv"),
         )
         .groupBy("n", "sy", "m")
         .agg(
@@ -633,19 +633,19 @@ def stats_yuen_trimmed_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
     a = r.groupBy("n_name", "g").agg(
         F.max("cnt").cast("long").alias("n"),
         F.max(k_).cast("long").alias("k"),
-        F.sum(F.when(in_trim, _dec(F.col("cents"))).otherwise(zero)).alias("st"),
+        F.sum(F.when(in_trim, dec38(F.col("cents"))).otherwise(zero)).alias("st"),
         F.sum(
-            F.when(in_trim, _dec(F.col("cents")) * F.col("cents")).otherwise(zero)
+            F.when(in_trim, dec38(F.col("cents")) * F.col("cents")).otherwise(zero)
         ).alias("stt"),
         F.max(F.when(F.col("rn") == k_ + 1, F.col("cents"))).alias("lo"),
         F.max(F.when(F.col("rn") == F.col("cnt") - k_, F.col("cents"))).alias("hi"),
     )
     h = F.col("n") - 2 * F.col("k")
-    sw = F.col("st") + _dec(F.col("k")) * F.col("lo") + _dec(F.col("k")) * F.col("hi")
+    sw = F.col("st") + dec38(F.col("k")) * F.col("lo") + dec38(F.col("k")) * F.col("hi")
     sww = (
         F.col("stt")
-        + _dec(F.col("k")) * F.col("lo") * F.col("lo")
-        + _dec(F.col("k")) * F.col("hi") * F.col("hi")
+        + dec38(F.col("k")) * F.col("lo") * F.col("lo")
+        + dec38(F.col("k")) * F.col("hi") * F.col("hi")
     )
     nd = F.col("n").cast("double")
     s2w = (
@@ -704,7 +704,7 @@ def stats_yuen_trimmed_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _xi_oracle() -> str:
     from .roundeleven2 import _SQL_DAILY_COUNTS_IDX
 
-    hd = _sql_halfup_div
+    hd = sql_halfup_div
     return f"""
     WITH {_SQL_DAILY_COUNTS_IDX.strip()}
     , vals AS (
@@ -767,7 +767,7 @@ def stats_chatterjee_xi_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     t = Tables(spark, sf_dir)
     idx = _daily_counts_idx(t)
-    vals = idx.groupBy("y").agg(_dec(F.count(F.lit(1))).alias("cnt"))
+    vals = idx.groupBy("y").agg(dec38(F.count(F.lit(1))).alias("cnt"))
     wv = Window.orderBy("y").rowsBetween(Window.unboundedPreceding, -1)
     cumv = vals.select(
         "y",
@@ -777,7 +777,7 @@ def stats_chatterjee_xi_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     rk = idx.join(F.broadcast(cumv), "y").select(
         "k", (F.col("cum") + F.col("cnt")).alias("r")
     )
-    nn = rk.agg(_dec(F.count(F.lit(1))).alias("n"))
+    nn = rk.agg(dec38(F.count(F.lit(1))).alias("n"))
     b = rk.select(F.col("k").alias("kb"), F.col("r").alias("rb"))
     snum = rk.join(b, F.col("kb") == F.col("k") + 1).agg(
         F.sum(F.abs(F.col("r") - F.col("rb"))).alias("s")
@@ -798,7 +798,7 @@ def stats_chatterjee_xi_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("dd") > 0,
                 (
                     F.lit(1_000_000)
-                    - _halfup_div(
+                    - halfup_div(
                         m6 * F.col("n") * F.col("s"),
                         F.lit(2).cast("decimal(38,0)") * F.col("dd"),
                     )

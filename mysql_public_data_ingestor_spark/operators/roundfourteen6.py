@@ -35,9 +35,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.exact import dec38, halfup_div, sql_halfup_div
 from ..registry import register
 from ..tables import Tables
-from .roundeleven import _dec, _halfup_div, _sql_halfup_div
 
 # ---------------------------------------------------------------------------
 # shared: per-nation order cents with per-nation totals broadcast back
@@ -79,7 +79,7 @@ def _nation_cents(t: Tables) -> DataFrame:
         .select("n_name", cents.alias("cents"))
     )
     tot = c.groupBy("n_name").agg(
-        _dec(F.count(F.lit(1))).alias("n"), F.sum(_dec(F.col("cents"))).alias("sy")
+        dec38(F.count(F.lit(1))).alias("n"), F.sum(dec38(F.col("cents"))).alias("sy")
     )
     return c.join(F.broadcast(tot), "n_name")
 
@@ -148,12 +148,12 @@ def stats_lorenz_asymmetry(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("n").alias("n"),
         F.max("sy").alias("sy"),
         F.sum(F.when(below, 1).otherwise(0)).cast("decimal(38,0)").alias("m"),
-        F.sum(F.when(below, _dec(F.col("cents"))).otherwise(F.lit(0).cast("decimal(38,0)"))).alias("lm"),
+        F.sum(F.when(below, dec38(F.col("cents"))).otherwise(F.lit(0).cast("decimal(38,0)"))).alias("lm"),
         F.max(F.when(below, F.col("cents"))).alias("xm"),
         F.min(F.when(~below, F.col("cents"))).alias("xm1"),
     )
     delta = (F.col("sy") - F.col("n") * F.col("xm")).cast("double") / (
-        F.col("n") * (_dec(F.col("xm1")) - F.col("xm"))
+        F.col("n") * (dec38(F.col("xm1")) - F.col("xm"))
     ).cast("double")
     s = (F.col("m").cast("double") + delta) / F.col("n").cast("double") + (
         F.col("lm").cast("double") + delta * F.col("xm1").cast("double")
@@ -177,7 +177,7 @@ ATK_SQRT_SCALE = 1_000_000           # micro-scale sqrt quantization
 
 
 def _atkinson_oracle() -> str:
-    hd = _sql_halfup_div
+    hd = sql_halfup_div
     return f"""
     WITH {_SQL_NATION_CENTS.strip()}
     , q AS (
@@ -229,15 +229,15 @@ def stats_atkinson_index_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     t = Tables(spark, sf_dir)
     j = _nation_cents(t)
-    recip = _halfup_div(
-        F.lit(ATK_RECIP_SCALE).cast("decimal(38,0)"), _dec(F.col("cents"))
+    recip = halfup_div(
+        F.lit(ATK_RECIP_SCALE).cast("decimal(38,0)"), dec38(F.col("cents"))
     )
     sqq = F.floor(
         F.sqrt(F.col("cents").cast("double")) * F.lit(float(ATK_SQRT_SCALE))
         + F.lit(0.5)
     ).cast("long")
     q = j.groupBy("n_name", "n", "sy").agg(
-        F.sum(recip).alias("sr"), F.sum(_dec(sqq)).alias("ss")
+        F.sum(recip).alias("sr"), F.sum(dec38(sqq)).alias("ss")
     )
     nd = F.col("n").cast("double")
     msqrt = F.col("ss").cast("double") / (nd * F.lit(float(ATK_SQRT_SCALE)))
@@ -251,7 +251,7 @@ def stats_atkinson_index_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         (
             F.lit(1_000_000)
-            - _halfup_div(
+            - halfup_div(
                 m6
                 * F.col("n")
                 * F.col("n")
@@ -270,7 +270,7 @@ def stats_atkinson_index_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _hoover_oracle() -> str:
-    hd = _sql_halfup_div
+    hd = sql_halfup_div
     return f"""
     WITH {_SQL_NATION_CENTS.strip()}
     , a AS (
@@ -314,7 +314,7 @@ def stats_hoover_index_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     return a.select(
         F.col("n_name").alias("nation"),
         F.col("n").cast("long").alias("n_orders"),
-        _halfup_div(
+        halfup_div(
             m6 * F.col("sad"),
             F.lit(2).cast("decimal(38,0)") * F.col("n") * F.col("sy"),
         )
@@ -390,14 +390,14 @@ def events_theil_u_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     b7 = daily.select(F.date_add(F.col("d"), 7).alias("d"), F.col("y").alias("y7"))
     b1 = daily.select(F.date_add(F.col("d"), 1).alias("d"), F.col("y").alias("y1"))
     scored = daily.join(b7, "d").join(b1, "d")
-    d7 = _dec(F.col("y") - F.col("y7"))
-    d1 = _dec(F.col("y") - F.col("y1"))
+    d7 = dec38(F.col("y") - F.col("y7"))
+    d1 = dec38(F.col("y") - F.col("y1"))
     s = scored.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum(d7 * d7).alias("sse7"),
         F.sum(d1 * d1).alias("sse1"),
-        F.sum(_dec(F.col("y")) * F.col("y")).alias("syy"),
-        F.sum(_dec(F.col("y7")) * F.col("y7")).alias("sff"),
+        F.sum(dec38(F.col("y")) * F.col("y")).alias("syy"),
+        F.sum(dec38(F.col("y7")) * F.col("y7")).alias("sff"),
     )
     return s.select(
         F.col("n").alias("n_days_scored"),
@@ -528,7 +528,7 @@ def events_ami_lag_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     t = Tables(spark, sf_dir)
     daily = t.events.groupBy(F.to_date("ts").alias("day")).agg(
-        _dec(F.count(F.lit(1))).alias("y")
+        dec38(F.count(F.lit(1))).alias("y")
     )
     b0 = daily.select(F.col("day").alias("day_b"))
     idx = (
@@ -601,7 +601,7 @@ def events_ami_lag_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _paradox_oracle() -> str:
-    hd = _sql_halfup_div
+    hd = sql_halfup_div
     return f"""
     WITH ordered AS (
       SELECT event_type,
@@ -665,23 +665,23 @@ def events_inspection_paradox_interarrival(
         (F.unix_timestamp("ts") - F.lag(F.unix_timestamp("ts")).over(w)).alias("gap"),
     ).where(F.col("gap").isNotNull())
     agg = gaps.groupBy("event_type").agg(
-        _dec(F.count(F.lit(1))).alias("n"),
-        F.sum(_dec(F.col("gap"))).alias("s"),
-        F.sum(_dec(F.col("gap")) * F.col("gap")).alias("q"),
+        dec38(F.count(F.lit(1))).alias("n"),
+        F.sum(dec38(F.col("gap"))).alias("s"),
+        F.sum(dec38(F.col("gap")) * F.col("gap")).alias("q"),
     )
     k1 = F.lit(1000).cast("decimal(38,0)")
     m6 = F.lit(1_000_000).cast("decimal(38,0)")
     return agg.select(
         "event_type",
         F.col("n").cast("long").alias("n_gaps"),
-        _halfup_div(k1 * F.col("s"), F.col("n")).cast("long").alias("mean_gap_milli"),
+        halfup_div(k1 * F.col("s"), F.col("n")).cast("long").alias("mean_gap_milli"),
         F.when(
             F.col("s") > 0,
-            _halfup_div(k1 * F.col("q"), F.col("s")).cast("long"),
+            halfup_div(k1 * F.col("q"), F.col("s")).cast("long"),
         ).alias("length_biased_mean_milli"),
         F.when(
             F.col("s") > 0,
-            _halfup_div(m6 * F.col("n") * F.col("q"), F.col("s") * F.col("s")).cast(
+            halfup_div(m6 * F.col("n") * F.col("q"), F.col("s") * F.col("s")).cast(
                 "long"
             ),
         ).alias("paradox_ratio_micro"),

@@ -30,9 +30,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.exact import dec38, halfup_div, sql_halfup_div
 from ..registry import register
 from ..tables import Tables
-from .roundeleven import _dec, _halfup_div, _sql_halfup_div
 
 # ---------------------------------------------------------------------------
 # 1. Herdan / Dugast / Maas log-log lexical richness
@@ -206,9 +206,9 @@ def text_readability_ari_cli(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("lang")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_docs"),
-            F.sum(_dec(F.col("letters"))).alias("l"),
-            F.sum(_dec(F.col("words"))).alias("w"),
-            F.sum(_dec(F.col("sentences"))).alias("s"),
+            F.sum(dec38(F.col("letters"))).alias("l"),
+            F.sum(dec38(F.col("words"))).alias("w"),
+            F.sum(dec38(F.col("sentences"))).alias("s"),
         )
     )
     ld = F.col("l").cast("double")
@@ -281,7 +281,7 @@ def _lang_bigram_counts(t: Tables) -> DataFrame:
 
 
 def _kn_oracle() -> str:
-    hd = _sql_halfup_div
+    hd = sql_halfup_div
     return f"""
     WITH {_SQL_LANG_BIGRAMS.strip()}
     , coc AS (
@@ -347,8 +347,8 @@ def corpus_kneser_ney_discounts(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = Tables(spark, sf_dir)
     lm = _lang_bigram_counts(t)
     coc = lm.groupBy("lang").agg(
-        F.sum(_dec(F.col("c"))).alias("n_bigrams"),
-        _dec(F.count(F.lit(1))).alias("n_types"),
+        F.sum(dec38(F.col("c"))).alias("n_bigrams"),
+        dec38(F.count(F.lit(1))).alias("n_types"),
         F.sum(F.when(F.col("c") == 1, 1).otherwise(0)).cast("decimal(38,0)").alias("n1"),
         F.sum(F.when(F.col("c") == 2, 1).otherwise(0)).cast("decimal(38,0)").alias("n2"),
         F.sum(F.when(F.col("c") == 3, 1).otherwise(0)).cast("decimal(38,0)").alias("n3"),
@@ -365,13 +365,13 @@ def corpus_kneser_ney_discounts(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n3").cast("long").alias("n3"),
         F.col("n4").cast("long").alias("n4"),
         F.when(
-            den > 0, _halfup_div(m6 * F.col("n1"), den).cast("long")
+            den > 0, halfup_div(m6 * F.col("n1"), den).cast("long")
         ).alias("y_micro"),
         F.when(
             F.col("n1") > 0,
             (
                 F.lit(1_000_000)
-                - _halfup_div(
+                - halfup_div(
                     F.lit(2_000_000).cast("decimal(38,0)") * F.col("n1") * F.col("n2"),
                     den * F.col("n1"),
                 )
@@ -381,7 +381,7 @@ def corpus_kneser_ney_discounts(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n2") > 0,
             (
                 F.lit(2_000_000)
-                - _halfup_div(
+                - halfup_div(
                     F.lit(3_000_000).cast("decimal(38,0)") * F.col("n1") * F.col("n3"),
                     den * F.col("n2"),
                 )
@@ -391,7 +391,7 @@ def corpus_kneser_ney_discounts(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("n3") > 0) & (den > 0),
             (
                 F.lit(3_000_000)
-                - _halfup_div(
+                - halfup_div(
                     F.lit(4_000_000).cast("decimal(38,0)") * F.col("n1") * F.col("n4"),
                     den * F.col("n3"),
                 )
@@ -520,7 +520,7 @@ TOPK_MASS_KS = (100, 1_000, 10_000)
 
 
 def _topk_mass_oracle() -> str:
-    hd = _sql_halfup_div
+    hd = sql_halfup_div
     parts = [
         f"""
     WITH {_SQL_LANG_BIGRAMS.strip()}
@@ -578,7 +578,7 @@ def corpus_bigram_topk_mass_coverage(spark: SparkSession, sf_dir: str) -> DataFr
         .agg(F.sum("c").cast("long").alias("c"))
     )
     tot = lm_g.agg(
-        F.sum(_dec(F.col("c"))).alias("n"), _dec(F.count(F.lit(1))).alias("v")
+        F.sum(dec38(F.col("c"))).alias("n"), dec38(F.count(F.lit(1))).alias("v")
     )
     m6 = F.lit(1_000_000).cast("decimal(38,0)")
     outs = []
@@ -586,14 +586,14 @@ def corpus_bigram_topk_mass_coverage(spark: SparkSession, sf_dir: str) -> DataFr
         topk = (
             lm_g.orderBy(F.col("c").desc(), "w1", "w2")
             .limit(k)
-            .agg(F.sum(_dec(F.col("c"))).alias("mass"))
+            .agg(F.sum(dec38(F.col("c"))).alias("mass"))
         )
         outs.append(
             topk.crossJoin(F.broadcast(tot)).select(
                 F.lit(k).cast("long").alias("k"),
                 F.col("n").cast("long").alias("total_mass"),
                 F.least(F.col("mass"), F.col("n")).cast("long").alias("topk_mass"),
-                _halfup_div(m6 * F.col("mass"), F.col("n"))
+                halfup_div(m6 * F.col("mass"), F.col("n"))
                 .cast("long")
                 .alias("coverage_micro"),
             )
@@ -612,7 +612,7 @@ def corpus_bigram_topk_mass_coverage(spark: SparkSession, sf_dir: str) -> DataFr
 def _oov_oracle() -> str:
     from .corpus import _SQL_ID_HASH, _SQL_TOKENS, TRAIN_CUT, VAL_CUT
 
-    hd = _sql_halfup_div
+    hd = sql_halfup_div
     return f"""
     WITH assigned AS (
       SELECT lang, text,
@@ -700,7 +700,7 @@ def corpus_oov_rate_val_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("in_train").isNull(), 1).otherwise(0).alias("oov"),
     )
     m6 = F.lit(1_000_000).cast("decimal(38,0)")
-    oov_mass = F.sum(F.when(F.col("oov") == 1, _dec(F.col("c"))).otherwise(F.lit(0).cast("decimal(38,0)")))
+    oov_mass = F.sum(F.when(F.col("oov") == 1, dec38(F.col("c"))).otherwise(F.lit(0).cast("decimal(38,0)")))
     return (
         marked.groupBy("lang")
         .agg(
@@ -708,10 +708,10 @@ def corpus_oov_rate_val_split(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("oov").cast("long").alias("oov_types"),
             F.sum("c").cast("long").alias("val_tokens"),
             oov_mass.cast("long").alias("oov_tokens"),
-            _halfup_div(m6 * _dec(F.sum("oov")), _dec(F.count(F.lit(1))))
+            halfup_div(m6 * dec38(F.sum("oov")), dec38(F.count(F.lit(1))))
             .cast("long")
             .alias("oov_type_rate_micro"),
-            _halfup_div(m6 * oov_mass, F.sum(_dec(F.col("c"))))
+            halfup_div(m6 * oov_mass, F.sum(dec38(F.col("c"))))
             .cast("long")
             .alias("oov_mass_rate_micro"),
         )

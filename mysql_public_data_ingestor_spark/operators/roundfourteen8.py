@@ -34,9 +34,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.exact import dec38, halfup_div, sql_halfup_div
 from ..registry import register
 from ..tables import Tables
-from .roundeleven import _dec, _halfup_div, _sql_halfup_div
 
 # ---------------------------------------------------------------------------
 # shared: the (v desc, n_sel, tp) ROC cumulative with totals
@@ -344,7 +344,7 @@ COST_PC_DEN = 20  # pc grid i/20, i = 1..19
 def _cost_env_oracle() -> str:
     from .ml import _scored_labeled_sql
 
-    hd = _sql_halfup_div
+    hd = sql_halfup_div
     return (
         _scored_labeled_sql()
         + ", "
@@ -411,19 +411,19 @@ def ml_cost_curve_envelope(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     j = cum0.crossJoin(F.broadcast(pcs)).crossJoin(F.broadcast(tot))
     m6 = F.lit(1_000_000).cast("decimal(38,0)")
-    nden = F.lit(COST_PC_DEN).cast("decimal(38,0)") * _dec(F.col("p")) * _dec(
+    nden = F.lit(COST_PC_DEN).cast("decimal(38,0)") * dec38(F.col("p")) * dec38(
         F.col("nn") - F.col("p")
     )
     nnum = m6 * (
-        _dec(F.col("i")) * _dec(F.col("p") - F.col("tp")) * _dec(F.col("nn") - F.col("p"))
-        + _dec(F.lit(COST_PC_DEN) - F.col("i"))
-        * _dec(F.col("n_sel") - F.col("tp"))
-        * _dec(F.col("p"))
+        dec38(F.col("i")) * dec38(F.col("p") - F.col("tp")) * dec38(F.col("nn") - F.col("p"))
+        + dec38(F.lit(COST_PC_DEN) - F.col("i"))
+        * dec38(F.col("n_sel") - F.col("tp"))
+        * dec38(F.col("p"))
     )
-    nec = j.select("i", _halfup_div(nnum, nden).cast("long").alias("nec_micro"))
+    nec = j.select("i", halfup_div(nnum, nden).cast("long").alias("nec_micro"))
     env = nec.groupBy("i").agg(F.min("nec_micro").alias("envelope_micro"))
-    triv = _halfup_div(
-        m6 * _dec(F.least(F.col("i"), F.lit(COST_PC_DEN) - F.col("i"))),
+    triv = halfup_div(
+        m6 * dec38(F.least(F.col("i"), F.lit(COST_PC_DEN) - F.col("i"))),
         F.lit(COST_PC_DEN).cast("decimal(38,0)"),
     ).cast("long")
     return env.select(
@@ -443,7 +443,7 @@ BETA_THRESH = ((1, 2), (1, 1), (2, 1))  # beta = 0.5, 1, 2
 
 
 def _beta_oracle() -> str:
-    hd = _sql_halfup_div
+    hd = sql_halfup_div
     thr_cols = []
     for bn, bd in BETA_THRESH:
         nm = f"share_groups_beta_gt_{bn}_{bd}_micro"
@@ -528,10 +528,10 @@ def privacy_beta_likeness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             "lang",
             "len_bucket",
             F.when(
-                _dec(F.col("c")) * F.col("big_n") > _dec(F.col("cs")) * F.col("ng"),
-                _halfup_div(
-                    m6 * (_dec(F.col("c")) * F.col("big_n") - _dec(F.col("cs")) * F.col("ng")),
-                    _dec(F.col("cs")) * F.col("ng"),
+                dec38(F.col("c")) * F.col("big_n") > dec38(F.col("cs")) * F.col("ng"),
+                halfup_div(
+                    m6 * (dec38(F.col("c")) * F.col("big_n") - dec38(F.col("cs")) * F.col("ng")),
+                    dec38(F.col("cs")) * F.col("ng"),
                 ).cast("long"),
             )
             .otherwise(F.lit(0).cast("long"))
@@ -548,9 +548,9 @@ def privacy_beta_likeness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     for bn, bd in BETA_THRESH:
         thr = 1_000_000 * bn // bd
         cols.append(
-            _halfup_div(
-                m6 * _dec(F.sum(F.when(F.col("mb") > thr, 1).otherwise(0))),
-                _dec(F.count(F.lit(1))),
+            halfup_div(
+                m6 * dec38(F.sum(F.when(F.col("mb") > thr, 1).otherwise(0))),
+                dec38(F.count(F.lit(1))),
             )
             .cast("long")
             .alias(f"share_groups_beta_gt_{bn}_{bd}_micro")
@@ -566,7 +566,7 @@ REID_KS = (5, 10, 20)
 
 
 def _reid_oracle() -> str:
-    hd = _sql_halfup_div
+    hd = sql_halfup_div
     kcols = []
     for k in REID_KS:
         num = f"1000000::HUGEINT * sum(CASE WHEN ng < {k} THEN ng ELSE 0 END)"
@@ -625,16 +625,16 @@ def privacy_reid_risk_prosecutor(spark: SparkSession, sf_dir: str) -> DataFrame:
     cols = [
         F.sum("ng").cast("long").alias("n_records"),
         F.count(F.lit(1)).cast("long").alias("n_groups"),
-        _halfup_div(m6 * _dec(F.count(F.lit(1))), F.sum(_dec(F.col("ng"))))
+        halfup_div(m6 * dec38(F.count(F.lit(1))), F.sum(dec38(F.col("ng"))))
         .cast("long")
         .alias("avg_risk_micro"),
-        _halfup_div(m6, _dec(F.min("ng"))).cast("long").alias("max_risk_micro"),
+        halfup_div(m6, dec38(F.min("ng"))).cast("long").alias("max_risk_micro"),
     ]
     for k in REID_KS:
         cols.append(
-            _halfup_div(
-                m6 * F.sum(F.when(F.col("ng") < k, _dec(F.col("ng"))).otherwise(zero)),
-                F.sum(_dec(F.col("ng"))),
+            halfup_div(
+                m6 * F.sum(F.when(F.col("ng") < k, dec38(F.col("ng"))).otherwise(zero)),
+                F.sum(dec38(F.col("ng"))),
             )
             .cast("long")
             .alias(f"share_records_risk_gt_1_{k}_micro")
@@ -653,7 +653,7 @@ PR_Q = 10_000  # per-element quantization; 1e4 (not the cov-power 1e6)
 
 
 def _pr_oracle() -> str:
-    hd = _sql_halfup_div
+    hd = sql_halfup_div
     return f"""
     WITH ex AS (
       SELECT vec_id, i,
@@ -741,9 +741,9 @@ def embedding_participation_ratio(spark: SparkSession, sf_dir: str) -> DataFrame
     )
     means = (
         ex.groupBy("i")
-        .agg(F.sum(_dec(F.col("xq"))).alias("sx"))
+        .agg(F.sum(dec38(F.col("xq"))).alias("sx"))
         .crossJoin(F.broadcast(nn.select("n")))
-        .select("i", _halfup_div(F.col("sx"), F.col("n")).cast("long").alias("m"))
+        .select("i", halfup_div(F.col("sx"), F.col("n")).cast("long").alias("m"))
     )
     cx = ex.join(F.broadcast(means), "i").select(
         "vec_id", "i", (F.col("xq") - F.col("m")).alias("c")
@@ -754,7 +754,7 @@ def embedding_participation_ratio(spark: SparkSession, sf_dir: str) -> DataFrame
         a.join(b, "vec_id")
         .where(F.col("di") <= F.col("dj"))
         .groupBy("di", "dj")
-        .agg(F.sum(_dec(F.col("ca")) * F.col("cb")).alias("s"))
+        .agg(F.sum(dec38(F.col("ca")) * F.col("cb")).alias("s"))
     )
     traces = scatter.agg(
         F.sum(F.when(F.col("di") == F.col("dj"), F.col("s")).otherwise(
@@ -771,11 +771,11 @@ def embedding_participation_ratio(spark: SparkSession, sf_dir: str) -> DataFrame
         F.col("n").cast("long").alias("n_vecs"),
         F.col("d").alias("dim"),
         F.col("tr_s").cast("long").alias("trace_scatter"),
-        _halfup_div(m6 * F.col("tr_s") * F.col("tr_s"), F.col("frob2"))
+        halfup_div(m6 * F.col("tr_s") * F.col("tr_s"), F.col("frob2"))
         .cast("long")
         .alias("participation_ratio_micro"),
-        _halfup_div(
-            m6 * F.col("tr_s") * F.col("tr_s"), F.col("frob2") * _dec(F.col("d"))
+        halfup_div(
+            m6 * F.col("tr_s") * F.col("tr_s"), F.col("frob2") * dec38(F.col("d"))
         )
         .cast("long")
         .alias("pr_over_d_micro"),

@@ -35,9 +35,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.exact import dec38, halfup_div, sql_halfup_div
 from ..registry import register
 from ..tables import Tables
-from .roundeleven import _dec, _halfup_div, _sql_halfup_div
 
 # ---------------------------------------------------------------------------
 # 1. kNN reciprocity audit over the hubness hash sample
@@ -47,7 +47,7 @@ from .roundeleven import _dec, _halfup_div, _sql_halfup_div
 def _recip_oracle() -> str:
     from .roundtwelve10 import HUB_BUCKETS, HUB_K, HUB_PER_BUCKET
 
-    hd = _sql_halfup_div
+    hd = sql_halfup_div
     B, CAP, K = HUB_BUCKETS, HUB_PER_BUCKET, HUB_K
     return f"""
     WITH ranked AS (
@@ -163,7 +163,7 @@ def similarity_knn_reciprocity_audit(spark: SparkSession, sf_dir: str) -> DataFr
         F.floor(F.col("x") * 1000000.0 + 0.5).cast("long").alias("xq"),
     )
     norms = vq.groupBy("vec_id").agg(
-        F.sum(_dec(F.col("xq") * F.col("xq"))).alias("n2")
+        F.sum(dec38(F.col("xq") * F.col("xq"))).alias("n2")
     )
     a = vq.select(F.col("vec_id").alias("va"), "pos", F.col("xq").alias("xa"))
     bq = vq.select(F.col("vec_id").alias("vb"), "pos", F.col("xq").alias("xb"))
@@ -171,7 +171,7 @@ def similarity_knn_reciprocity_audit(spark: SparkSession, sf_dir: str) -> DataFr
         a.join(bq, ["pos"])
         .filter(F.col("va") < F.col("vb"))
         .groupBy("va", "vb")
-        .agg(F.sum(_dec(F.col("xa") * F.col("xb"))).alias("dot"))
+        .agg(F.sum(dec38(F.col("xa") * F.col("xb"))).alias("dot"))
     )
     na = norms.select(F.col("vec_id").alias("va"), F.col("n2").alias("na"))
     nb = norms.select(F.col("vec_id").alias("vb"), F.col("n2").alias("nb"))
@@ -221,10 +221,10 @@ def similarity_knn_reciprocity_audit(spark: SparkSession, sf_dir: str) -> DataFr
         F.lit(K).cast("long").alias("k"),
         "n_directed",
         "n_mutual",
-        _halfup_div(m6 * _dec(F.col("n_mutual")), _dec(F.col("n_directed")))
+        halfup_div(m6 * dec38(F.col("n_mutual")), dec38(F.col("n_directed")))
         .cast("long")
         .alias("reciprocity_micro"),
-        _halfup_div(m6 * _dec(F.col("n_nn_mutual_x2")), _dec(F.col("n_sample")))
+        halfup_div(m6 * dec38(F.col("n_nn_mutual_x2")), dec38(F.col("n_sample")))
         .cast("long")
         .alias("nn_mutual_micro"),
     )
@@ -238,7 +238,7 @@ def similarity_knn_reciprocity_audit(spark: SparkSession, sf_dir: str) -> DataFr
 def _paradox_oracle() -> str:
     from .graph import _SQL_EDGES
 
-    hd = _sql_halfup_div
+    hd = sql_halfup_div
     return (
         _SQL_EDGES
         + f"""
@@ -291,18 +291,18 @@ def graph_friendship_paradox_audit(spark: SparkSession, sf_dir: str) -> DataFram
     t = Tables(spark, sf_dir)
     deg = _degrees(edge_table(spark, t, sf_dir))
     agg = deg.agg(
-        _dec(F.count(F.lit(1))).alias("n"),
-        F.sum(_dec(F.col("degree"))).alias("sk"),
-        F.sum(_dec(F.col("degree")) * F.col("degree")).alias("sk2"),
+        dec38(F.count(F.lit(1))).alias("n"),
+        F.sum(dec38(F.col("degree"))).alias("sk"),
+        F.sum(dec38(F.col("degree")) * F.col("degree")).alias("sk2"),
     )
     m6 = F.lit(1_000_000).cast("decimal(38,0)")
     two = F.lit(2).cast("decimal(38,0)")
     return agg.select(
         F.col("n").cast("long").alias("n_nodes"),
         ((F.col("sk") - F.col("sk") % two) / two).cast("long").alias("n_edges"),
-        _halfup_div(m6 * F.col("sk"), F.col("n")).cast("long").alias("mean_deg_micro"),
-        _halfup_div(m6 * F.col("sk2"), F.col("sk")).cast("long").alias("kappa_micro"),
-        _halfup_div(m6 * F.col("n") * F.col("sk2"), F.col("sk") * F.col("sk"))
+        halfup_div(m6 * F.col("sk"), F.col("n")).cast("long").alias("mean_deg_micro"),
+        halfup_div(m6 * F.col("sk2"), F.col("sk")).cast("long").alias("kappa_micro"),
+        halfup_div(m6 * F.col("n") * F.col("sk2"), F.col("sk") * F.col("sk"))
         .cast("long")
         .alias("paradox_ratio_micro"),
         F.when(F.col("sk2") > two * F.col("sk"), 1).otherwise(0).cast("int").alias(
@@ -318,7 +318,7 @@ def graph_friendship_paradox_audit(spark: SparkSession, sf_dir: str) -> DataFram
 def _rqa_oracle() -> str:
     from .roundeleven2 import _SQL_DAILY_COUNTS_IDX
 
-    hd = _sql_halfup_div
+    hd = sql_halfup_div
     return f"""
     WITH {_SQL_DAILY_COUNTS_IDX.strip()}
     , nn AS (
@@ -435,15 +435,15 @@ def events_recurrence_rate_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n").alias("n_days"),
             F.col("eps").alias("eps_mad"),
             F.col("n_rec").alias("n_recurrent_pairs"),
-            _halfup_div(
-                F.lit(2_000_000).cast("decimal(38,0)") * _dec(F.col("n_rec")),
-                _dec(F.col("n")) * _dec(F.col("n") - 1),
+            halfup_div(
+                F.lit(2_000_000).cast("decimal(38,0)") * dec38(F.col("n_rec")),
+                dec38(F.col("n")) * dec38(F.col("n") - 1),
             )
             .cast("long")
             .alias("recurrence_rate_micro"),
             F.when(
                 F.col("n_rec") > 0,
-                _halfup_div(m6 * _dec(F.col("n_chain")), _dec(F.col("n_rec"))).cast(
+                halfup_div(m6 * dec38(F.col("n_chain")), dec38(F.col("n_rec"))).cast(
                     "long"
                 ),
             ).alias("determinism_proxy_micro"),
@@ -560,13 +560,13 @@ def stats_phi_yule_q_gates(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.size(F.split(F.col("text"), "\\.", -1)) - 1 >= COCHRAN_MIN_SENTENCES, 1
     ).otherwise(0)
     agg = t.documents.select(a.alias("a"), b.alias("b"), c.alias("c")).agg(
-        _dec(F.count(F.lit(1))).alias("n"),
-        F.sum(_dec(F.col("a"))).alias("n_a"),
-        F.sum(_dec(F.col("b"))).alias("n_b"),
-        F.sum(_dec(F.col("c"))).alias("n_c"),
-        F.sum(_dec(F.col("a") * F.col("b"))).alias("n_ab"),
-        F.sum(_dec(F.col("a") * F.col("c"))).alias("n_ac"),
-        F.sum(_dec(F.col("b") * F.col("c"))).alias("n_bc"),
+        dec38(F.count(F.lit(1))).alias("n"),
+        F.sum(dec38(F.col("a"))).alias("n_a"),
+        F.sum(dec38(F.col("b"))).alias("n_b"),
+        F.sum(dec38(F.col("c"))).alias("n_c"),
+        F.sum(dec38(F.col("a") * F.col("b"))).alias("n_ab"),
+        F.sum(dec38(F.col("a") * F.col("c"))).alias("n_ac"),
+        F.sum(dec38(F.col("b") * F.col("c"))).alias("n_bc"),
     )
     rows = []
     for name, x, y, xy in (
@@ -604,7 +604,7 @@ def stats_phi_yule_q_gates(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("nx") < F.col("n"))
         & (F.col("ny") < F.col("n"))
     )
-    m6 = F.lit(2_000_000).cast("decimal(38,0)")  # via _halfup_div(1e6*num, den)
+    m6 = F.lit(2_000_000).cast("decimal(38,0)")  # via halfup_div(1e6*num, den)
     return pairs.select(
         "pair",
         n11.cast("long").alias("n11"),
@@ -616,7 +616,7 @@ def stats_phi_yule_q_gates(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         F.when(
             qden > 0,
-            _halfup_div(F.lit(1_000_000).cast("decimal(38,0)") * num, qden).cast(
+            halfup_div(F.lit(1_000_000).cast("decimal(38,0)") * num, qden).cast(
                 "long"
             ),
         ).alias("yule_q_micro"),
@@ -629,7 +629,7 @@ def stats_phi_yule_q_gates(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _bhatt_oracle() -> str:
-    hd = _sql_halfup_div
+    hd = sql_halfup_div
     return """
     WITH li AS (
       SELECT CAST(floor(l.l_discount * 100.0 + 0.5) AS BIGINT) AS disc,
@@ -703,7 +703,7 @@ def stats_bhattacharyya_hellinger_priority(
         (F.count(F.lit(1)) - F.sum("g")).cast("long").alias("c2"),
     )
     tot = cells.agg(
-        F.sum(_dec(F.col("c1"))).alias("n1"), F.sum(_dec(F.col("c2"))).alias("n2")
+        F.sum(dec38(F.col("c1"))).alias("n1"), F.sum(dec38(F.col("c2"))).alias("n2")
     )
     terms = cells.agg(
         F.sum(
@@ -799,20 +799,20 @@ def stats_cramers_v_bias_corrected(spark: SparkSession, sf_dir: str) -> DataFram
     t = Tables(spark, sf_dir)
     grid = t.orders.groupBy(
         F.col("o_orderpriority").alias("x"), F.col("o_orderstatus").alias("y")
-    ).agg(_dec(F.count(F.lit(1))).alias("c"))
+    ).agg(dec38(F.count(F.lit(1))).alias("c"))
     margs = grid.groupBy("x").agg(F.sum("c").alias("rx"))
     margc = grid.groupBy("y").agg(F.sum("c").alias("cy"))
     nn = grid.agg(
         F.sum("c").alias("n"),
-        _dec(F.countDistinct("x")).alias("r"),
-        _dec(F.countDistinct("y")).alias("cc"),
+        dec38(F.countDistinct("x")).alias("r"),
+        dec38(F.countDistinct("y")).alias("cc"),
     )
     terms = (
         grid.join(F.broadcast(margs), "x")
         .join(F.broadcast(margc), "y")
         .agg(
             F.sum(
-                _halfup_div(
+                halfup_div(
                     F.lit(1_000_000_000_000).cast("decimal(38,0)")
                     * F.col("c")
                     * F.col("c"),

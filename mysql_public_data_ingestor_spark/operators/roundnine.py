@@ -1,12 +1,8 @@
-"""Round-8-banked operator queue, ACTIVATED in round 9.
+"""Round-9 operator batch A.
 
-Round 8 filled the driver's 50-slot evaluation window exactly, so
-these operators followed the proven round-4/5 pattern: built and fully
-gated in round 8 (oracle parity, plan sweeps, fuzz profiles via
-`tests/test_roundnine.py`, sf0.1 + ×10 evidence in SCALE.md
-§§5g.8-5g.13), then registered via ``activate()`` in
-`registry._ensure_loaded` once CORRECTNESS_r08 came back 50/50 green
-(VERDICT r8 item 1).
+Gates: oracle parity, plan sweeps and fuzz profiles in
+`tests/test_roundnine.py`; sf0.1 + ×10 evidence in SCALE.md
+§§5g.8-5g.13.
 
 Batch theme: remaining standard-toolbox members each family still
 lacked — Cramér-von Mises (the quadratic ECDF two-sample test beside
@@ -27,36 +23,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.exact import dec38
+from ..registry import register
 from ..tables import Tables
-
-QUEUE: list[tuple] = []
-
-
-def _queued(name: str, oracle: str):
-    def deco(fn):
-        QUEUE.append((name, fn, oracle, fn.__doc__ or ""))
-        return fn
-
-    return deco
-
-
-_ACTIVATED = False
-
-
-def activate() -> None:
-    """Register every queued query (round-9 switch; idempotent)."""
-    global _ACTIVATED
-    if _ACTIVATED:
-        return
-    from ..registry import register
-
-    for name, fn, oracle, doc in QUEUE:
-        register(name, oracle=oracle, doc=doc)(fn)
-    _ACTIVATED = True
-
-
-def _dec(c):
-    return c.cast("decimal(38,0)")
 
 
 # ---------------------------------------------------------------------------
@@ -98,7 +67,7 @@ def _cvm_oracle() -> str:
     """
 
 
-@_queued("stats_cvm_two_sample", oracle=_cvm_oracle())
+@register("stats_cvm_two_sample", oracle=_cvm_oracle())
 def stats_cvm_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cramér-von Mises two-sample statistic on line quantity between
     returned ('R') and non-returned ('N') lines: the tie-adapted
@@ -138,13 +107,13 @@ def stats_cvm_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("cx").over(w_all).alias("n"),
         F.sum("cy").over(w_all).alias("m"),
     )
-    diff = _dec(F.col("cumx")) * F.col("m") - _dec(F.col("cumy")) * F.col("n")
+    diff = dec38(F.col("cumx")) * F.col("m") - dec38(F.col("cumy")) * F.col("n")
     s = cum.select(
-        "n", "m", (_dec(F.col("cx") + F.col("cy")) * diff * diff).alias("term")
+        "n", "m", (dec38(F.col("cx") + F.col("cy")) * diff * diff).alias("term")
     ).groupBy().agg(
         F.max("n").alias("n"), F.max("m").alias("m"), F.sum("term").alias("num")
     )
-    big_n = _dec(F.col("n") + F.col("m"))
+    big_n = dec38(F.col("n") + F.col("m"))
     return s.select(
         "n",
         "m",
@@ -190,7 +159,7 @@ def _burstiness_oracle() -> str:
     """
 
 
-@_queued("text_term_burstiness_topk", oracle=_burstiness_oracle())
+@register("text_term_burstiness_topk", oracle=_burstiness_oracle())
 def text_term_burstiness_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Burstiness (variance-to-mean ratio of per-document counts,
     zero-inclusive) for the top-20 terms by total frequency: VMR = 1
@@ -230,8 +199,8 @@ def text_term_burstiness_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "tf",
         "df",
         round_big_int_ratio(
-            _dec(F.col("n_docs")) * F.col("sum_c2") - _dec(F.col("tf")) * F.col("tf"),
-            _dec(F.col("n_docs")) * F.col("tf"),
+            dec38(F.col("n_docs")) * F.col("sum_c2") - dec38(F.col("tf")) * F.col("tf"),
+            dec38(F.col("n_docs")) * F.col("tf"),
         ).alias("burstiness_vmr"),
     )
 
@@ -286,7 +255,7 @@ def _coverage_oracle() -> str:
     """
 
 
-@_queued("dq_interval_union_coverage", oracle=_coverage_oracle())
+@register("dq_interval_union_coverage", oracle=_coverage_oracle())
 def dq_interval_union_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Interval-UNION coverage per customer: treating each order as a
     30-day activity window, compute the union length (overlaps merged)
@@ -382,7 +351,7 @@ def _ladder_oracle() -> str:
     """
 
 
-@_queued("privacy_generalization_ladder", oracle=_ladder_oracle())
+@register("privacy_generalization_ladder", oracle=_ladder_oracle())
 def privacy_generalization_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
     """k-anonymity generalization ladder: evaluate the SAME k=5
     anonymity criterion at three successive generalizations of the
@@ -503,7 +472,7 @@ def _katz_oracle() -> str:
     )
 
 
-@_queued("graph_katz_centrality_seeds", oracle=_katz_oracle())
+@register("graph_katz_centrality_seeds", oracle=_katz_oracle())
 def graph_katz_centrality_seeds(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Katz centrality (3-term walk series, beta = 0.005) of the seed
     parts: K(u) = sum_k beta^k * walks_k(u) — the walk-counting
@@ -616,7 +585,7 @@ def _harmonic_oracle() -> str:
     )
 
 
-@_queued("graph_harmonic_closeness_seeds", oracle=_harmonic_oracle())
+@register("graph_harmonic_closeness_seeds", oracle=_harmonic_oracle())
 def graph_harmonic_closeness_seeds(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Truncated harmonic closeness of the seed parts: H(u) =
     sum over nodes v within 3 hops of 1/d(u,v) — the
@@ -749,7 +718,7 @@ def _brier_decomp_oracle() -> str:
     )
 
 
-@_queued("ml_brier_decomposition", oracle=_brier_decomp_oracle())
+@register("ml_brier_decomposition", oracle=_brier_decomp_oracle())
 def ml_brier_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Murphy decomposition of the quality classifier's Brier score
     over its 10 calibration deciles: BS alongside reliability
@@ -783,7 +752,7 @@ def ml_brier_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_k"),
         F.sum("label").alias("pos_k"),
         F.sum("score_q").alias("sum_q_k"),
-        F.sum(_dec(err) * err).alias("sq_err_k"),
+        F.sum(dec38(err) * err).alias("sq_err_k"),
     )
     w_all = Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     withtot = bins.select(
@@ -792,10 +761,10 @@ def ml_brier_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("pos_k").over(w_all).alias("pos"),
         F.sum("sq_err_k").over(w_all).alias("sq_err"),
     )
-    rel_num = _dec(F.col("sum_q_k") - s * F.col("pos_k"))
+    rel_num = dec38(F.col("sum_q_k") - s * F.col("pos_k"))
     rel_a = F.lit(2).cast("decimal(38,0)") * (rel_num * rel_num * F.lit(10**9)) + F.col("n_k")
     rel_b = F.lit(2).cast("decimal(38,0)") * F.col("n_k")
-    res_num = _dec(F.col("pos_k")) * F.col("n") - _dec(F.col("pos")) * F.col("n_k")
+    res_num = dec38(F.col("pos_k")) * F.col("n") - dec38(F.col("pos")) * F.col("n_k")
     res_a = F.lit(2).cast("decimal(38,0)") * (res_num * res_num * F.lit(10**9)) + F.col("n_k")
     res_b = rel_b
     terms = withtot.select(
@@ -815,20 +784,20 @@ def ml_brier_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     return agg.select(
         F.col("n"),
         F.col("pos").alias("n_pos"),
-        round_big_int_ratio(F.col("sq_err"), _dec(F.col("n")) * F.lit(s * s), 9).alias(
+        round_big_int_ratio(F.col("sq_err"), dec38(F.col("n")) * F.lit(s * s), 9).alias(
             "brier"
         ),
         round_big_int_ratio(
-            F.col("sum_rel_u"), _dec(F.col("n")) * F.lit(s * s) * F.lit(10**9), 9
+            F.col("sum_rel_u"), dec38(F.col("n")) * F.lit(s * s) * F.lit(10**9), 9
         ).alias("reliability"),
         round_big_int_ratio(
             F.col("sum_res_u"),
-            _dec(F.col("n")) * F.col("n") * F.col("n") * F.lit(10**9),
+            dec38(F.col("n")) * F.col("n") * F.col("n") * F.lit(10**9),
             9,
         ).alias("resolution"),
         round_big_int_ratio(
-            _dec(F.col("pos")) * (F.col("n") - F.col("pos")),
-            _dec(F.col("n")) * F.col("n"),
+            dec38(F.col("pos")) * (F.col("n") - F.col("pos")),
+            dec38(F.col("n")) * F.col("n"),
             9,
         ).alias("uncertainty"),
     )
@@ -869,7 +838,7 @@ def _page_hinkley_oracle() -> str:
     """
 
 
-@_queued("stats_page_hinkley_orders", oracle=_page_hinkley_oracle())
+@register("stats_page_hinkley_orders", oracle=_page_hinkley_oracle())
 def stats_page_hinkley_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Page-Hinkley upward-drift detector over the daily order-count
     series: m_t = sum_{i<=t}(x_i - mean - delta), PH_t = m_t - min m,
@@ -988,7 +957,7 @@ def _auc_jackknife_oracle() -> str:
     )
 
 
-@_queued("ml_auc_jackknife_ci", oracle=_auc_jackknife_oracle())
+@register("ml_auc_jackknife_ci", oracle=_auc_jackknife_oracle())
 def ml_auc_jackknife_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Delete-one-group jackknife standard error on the classifier
     AUC: documents hash deterministically into 10 buckets, theta_b =
@@ -1056,9 +1025,9 @@ def ml_auc_jackknife_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_b = ranked.groupBy("bucket").agg(
         F.sum("cpos").alias("n_pos"),
         F.sum(F.col("cnt") - F.col("cpos")).alias("n_neg"),
-        F.sum(_dec(F.col("cpos")) * (2 * F.col("cum") + F.col("cnt") + 1)).alias("r2"),
+        F.sum(dec38(F.col("cpos")) * (2 * F.col("cum") + F.col("cnt") + 1)).alias("r2"),
     )
-    th_num = (F.col("r2") - _dec(F.col("n_pos")) * (F.col("n_pos") + 1)) * F.lit(10**9)
+    th_num = (F.col("r2") - dec38(F.col("n_pos")) * (F.col("n_pos") + 1)) * F.lit(10**9)
     th_den = F.lit(2).cast("decimal(38,0)") * F.col("n_pos") * F.col("n_neg")
     th_a = F.lit(2).cast("decimal(38,0)") * th_num + th_den
     th_b = F.lit(2).cast("decimal(38,0)") * th_den
@@ -1074,16 +1043,16 @@ def ml_auc_jackknife_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = theta.agg(
         F.count(F.lit(1)).alias("nb"),
         F.sum("theta_u").alias("s1"),
-        F.sum(_dec(F.col("theta_u")) * F.col("theta_u")).alias("s2"),
+        F.sum(dec38(F.col("theta_u")) * F.col("theta_u")).alias("s2"),
     )
     nb = F.col("nb")
     var_num = (
-        (_dec(nb) - 1) * (_dec(nb) * F.col("s2") - _dec(F.col("s1")) * F.col("s1"))
+        (dec38(nb) - 1) * (dec38(nb) * F.col("s2") - dec38(F.col("s1")) * F.col("s1"))
     ).cast("double")
     se = F.sqrt(var_num / (nb.cast("double") * nb)) / F.lit(1e9)
     return s.select(
         nb.alias("n_buckets"),
-        round_big_int_ratio(F.col("s1"), _dec(nb) * F.lit(10**9), 9).alias(
+        round_big_int_ratio(F.col("s1"), dec38(nb) * F.lit(10**9), 9).alias(
             "auc_jackknife_mean"
         ),
         (F.floor(se * F.lit(1e6) + F.lit(0.5)).cast("long") / F.lit(1e6)).alias(
@@ -1129,7 +1098,7 @@ def _ansari_oracle() -> str:
     """
 
 
-@_queued("stats_ansari_bradley_quantity", oracle=_ansari_oracle())
+@register("stats_ansari_bradley_quantity", oracle=_ansari_oracle())
 def stats_ansari_bradley_quantity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ansari-Bradley rank SCALE test on quantity between returned
     ('R') and non-returned ('N') lines: rank from both ends inward
@@ -1226,7 +1195,7 @@ def _rich_club_oracle() -> str:
     )
 
 
-@_queued("graph_rich_club_coefficient", oracle=_rich_club_oracle())
+@register("graph_rich_club_coefficient", oracle=_rich_club_oracle())
 def graph_rich_club_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rich-club coefficient phi(k) = 2*E_k / (n_k*(n_k-1)) of the
     co-purchase graph at degree thresholds k in {2,4,8,16,32}: the
@@ -1282,7 +1251,7 @@ def graph_rich_club_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(
             F.col("n_k") >= 2,
             round_big_int_ratio(
-                2 * F.col("e_k"), _dec(F.col("n_k")) * (F.col("n_k") - 1)
+                2 * F.col("e_k"), dec38(F.col("n_k")) * (F.col("n_k") - 1)
             ),
         ).alias("rich_club_phi"),
     ).orderBy("k")
@@ -1318,7 +1287,7 @@ def _stickiness_oracle() -> str:
     """
 
 
-@_queued("events_dau_mau_stickiness", oracle=_stickiness_oracle())
+@register("events_dau_mau_stickiness", oracle=_stickiness_oracle())
 def events_dau_mau_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DAU/MAU stickiness per calendar month: mean daily active users
     over monthly active users — the standard product-engagement ratio
@@ -1385,7 +1354,7 @@ def _sentence_oracle() -> str:
     """
 
 
-@_queued("text_sentence_length_profile", oracle=_sentence_oracle())
+@register("text_sentence_length_profile", oracle=_sentence_oracle())
 def text_sentence_length_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sentence-length profile per language: split documents on
     terminal punctuation runs ([.!?]+), normalize each sentence, and
@@ -1470,7 +1439,7 @@ def _lsh_recall_oracle() -> str:
     """
 
 
-@_queued("similarity_lsh_recall_audit", oracle=_lsh_recall_oracle())
+@register("similarity_lsh_recall_audit", oracle=_lsh_recall_oracle())
 def similarity_lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@10 of the banded-LSH ANN index against the exact
     brute-force cosine top-k, AS A REGISTERED QUERY — completing the
@@ -1546,7 +1515,7 @@ def _skyline_oracle() -> str:
     """
 
 
-@_queued("relational_skyline_pareto", oracle=_skyline_oracle())
+@register("relational_skyline_pareto", oracle=_skyline_oracle())
 def relational_skyline_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
     """2-D skyline (Pareto-optimal set) of parts under (minimize
     retail price, maximize size): a part is on the frontier iff no
@@ -1672,7 +1641,7 @@ def _anova2_oracle() -> str:
     """
 
 
-@_queued("stats_two_way_anova_price", oracle=_anova2_oracle())
+@register("stats_two_way_anova_price", oracle=_anova2_oracle())
 def stats_two_way_anova_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-way ANOVA of line price by return flag (3 levels) x order
     priority (5 levels): the full sums-of-squares table (A, B, AxB
@@ -1704,8 +1673,8 @@ def stats_two_way_anova_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cells = c.groupBy("fa", "fb").agg(
         F.count(F.lit(1)).alias("n_ab"),
-        F.sum(_dec(F.col("x"))).alias("t_ab"),
-        F.sum(_dec(F.col("x")) * F.col("x")).alias("sx2_ab"),
+        F.sum(dec38(F.col("x"))).alias("t_ab"),
+        F.sum(dec38(F.col("x")) * F.col("x")).alias("sx2_ab"),
     )
 
     def q_term(tcol, ncol):
@@ -1770,8 +1739,8 @@ def stats_two_way_anova_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     # of the two engines disagree in the last ulp (caught by the fuzz
     # gate); f is an exact half-up decimal ratio, always small.
     two = F.lit(2).cast("decimal(38,0)")
-    ms_a = two * F.col("ss_u") + _dec(F.col("df")) * 1000
-    ms_b = two * _dec(F.col("df")) * 1000
+    ms_a = two * F.col("ss_u") + dec38(F.col("df")) * 1000
+    ms_b = two * dec38(F.col("df")) * 1000
     f_num = F.col("ss_u") * F.col("df_e") * F.lit(10**6)
     f_den = F.col("ss_e_u") * F.col("df")
     f_a = two * f_num + f_den
@@ -1825,7 +1794,7 @@ def _ece_oracle() -> str:
     )
 
 
-@_queued("ml_expected_calibration_error", oracle=_ece_oracle())
+@register("ml_expected_calibration_error", oracle=_ece_oracle())
 def ml_expected_calibration_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Expected and maximum calibration error of the quality
     classifier over its 10 score deciles: ECE = sum_k (n_k/N) *
@@ -1913,7 +1882,7 @@ def _youden_oracle() -> str:
     )
 
 
-@_queued("ml_youden_optimal_threshold", oracle=_youden_oracle())
+@register("ml_youden_optimal_threshold", oracle=_youden_oracle())
 def ml_youden_optimal_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Youden-J optimal operating point of the quality classifier:
     sweep EVERY distinct score as the >=-threshold, J(t) = TPR - FPR,
@@ -2051,7 +2020,7 @@ def _retention_decay_oracle() -> str:
     """
 
 
-@_queued("events_retention_decay_fit", oracle=_retention_decay_oracle())
+@register("events_retention_decay_fit", oracle=_retention_decay_oracle())
 def events_retention_decay_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exponential decay fit of the pooled weekly retention curve:
     ln(r_w) regressed on week offset w (observable-triangle-corrected
@@ -2126,8 +2095,8 @@ def events_retention_decay_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return F.when(numc < 0, -mag.cast("long")).otherwise(mag.cast("long"))
 
-    i_num = _dec(F.col("sy")) * F.col("den") - _dec(F.col("num")) * F.col("sw")
-    i_den = _dec(F.col("n_weeks")) * F.col("den")
+    i_num = dec38(F.col("sy")) * F.col("den") - dec38(F.col("num")) * F.col("sw")
+    i_den = dec38(F.col("n_weeks")) * F.col("den")
     i_a = F.lit(2).cast("decimal(38,0)") * F.abs(i_num) + i_den
     i_mag = ((i_a - i_a % (F.lit(2).cast("decimal(38,0)") * i_den)) / (
         F.lit(2).cast("decimal(38,0)") * i_den
@@ -2186,7 +2155,7 @@ def _topshare_oracle() -> str:
     """
 
 
-@_queued("agg_top_value_share", oracle=_topshare_oracle())
+@register("agg_top_value_share", oracle=_topshare_oracle())
 def agg_top_value_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Revenue concentration ("whale curve"): the exact share of total
     order value held by the top 1% and top 10% of orders by value —
@@ -2228,7 +2197,7 @@ def agg_top_value_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     dvb = dv.withColumn("bin", F.expr(f"cents div {BIN_W}"))
     bins = dvb.groupBy("bin").agg(
         F.sum("cnt").alias("bcnt"),
-        F.sum(_dec(F.col("cnt")) * F.col("cents")).alias("bcs"),
+        F.sum(dec38(F.col("cnt")) * F.col("cents")).alias("bcs"),
     )
     # descending cumulative over the bounded bin domain via broadcast
     # non-equi self-join (no SinglePartition ordered stage)
@@ -2243,7 +2212,7 @@ def agg_top_value_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum("bcnt2").alias("ccnt"), F.sum("bcs2").alias("ccs"))
     )
     tot = dv.agg(
-        F.sum("cnt").alias("n"), F.sum(_dec(F.col("cnt")) * F.col("cents")).alias("total_cents")
+        F.sum("cnt").alias("n"), F.sum(dec38(F.col("cnt")) * F.col("cents")).alias("total_cents")
     )
 
     def share(pct: int):
@@ -2288,7 +2257,7 @@ def agg_top_value_share(spark: SparkSession, sf_dir: str) -> DataFrame:
             "k",
             "total_cents",
             (F.col("prev_cc") + F.sum("cnt").over(w_in)).alias("cc"),
-            F.sum(_dec(F.col("cnt")) * F.col("cents")).over(w_in).alias("cs"),
+            F.sum(dec38(F.col("cnt")) * F.col("cents")).over(w_in).alias("cs"),
         )
         boundary = (
             cum_in.filter(F.col("cc") >= F.col("k"))
@@ -2302,7 +2271,7 @@ def agg_top_value_share(spark: SparkSession, sf_dir: str) -> DataFrame:
                 (
                     F.col("b.prev_cs")
                     + F.col("b.cs")
-                    - _dec(F.col("b.cc") - F.col("b.k")) * F.col("b.cents")
+                    - dec38(F.col("b.cc") - F.col("b.k")) * F.col("b.cents")
                 ).alias("top_cents"),
                 F.col("b.total_cents").alias("total_cents"),
             )
@@ -2372,7 +2341,7 @@ def _kmv_intersection_oracle() -> str:
     """
 
 
-@_queued("sketch_kmv_intersection_users", oracle=_kmv_intersection_oracle())
+@register("sketch_kmv_intersection_users", oracle=_kmv_intersection_oracle())
 def sketch_kmv_intersection_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Theta/KMV INTERSECTION estimate: distinct users who both viewed
     and clicked, estimated from the two sets' hash order statistics —
@@ -2423,8 +2392,8 @@ def sketch_kmv_intersection_users(spark: SparkSession, sf_dir: str) -> DataFrame
     ua = ev.filter(F.col("g") == KMV_SET_A).select("user_id").distinct()
     ub = ev.filter(F.col("g") == KMV_SET_B).select("user_id").distinct()
     tru = ua.join(ub, "user_id").agg(F.count(F.lit(1)).alias("d_true"))
-    est_num = _dec(F.col("c")) * F.lit(k - 1) * F.lit(dom)
-    est_den = _dec(F.lit(k)) * F.col("th")
+    est_num = dec38(F.col("c")) * F.lit(k - 1) * F.lit(dom)
+    est_den = dec38(F.lit(k)) * F.col("th")
     est = F.when(
         F.col("k_eff") == k,
         ((est_num - est_num % est_den) / est_den).cast("long"),
@@ -2477,7 +2446,7 @@ def _serpentine_oracle() -> str:
     """
 
 
-@_queued("layout_serpentine_shard_balance", oracle=_serpentine_oracle())
+@register("layout_serpentine_shard_balance", oracle=_serpentine_oracle())
 def layout_serpentine_shard_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Serpentine (boustrophedon) size-balanced shard assignment of
     document payloads: within each source, order docs by size

@@ -24,12 +24,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.exact import dec38
 from ..registry import register
 from ..tables import Tables
-
-
-def _dec(c):
-    return c.cast("decimal(38,0)")
 
 
 # ---------------------------------------------------------------------------
@@ -166,7 +163,7 @@ def sketch_rank_sample_quantile_merge(spark: SparkSession, sf_dir: str) -> DataF
         F.col("n").alias("n_total"),
         "achieved_rank",
         round_big_int_ratio(
-            F.abs(F.lit(100) * _dec(F.col("achieved_rank")) - _dec(F.col("q")) * F.col("n")),
+            F.abs(F.lit(100) * dec38(F.col("achieved_rank")) - dec38(F.col("q")) * F.col("n")),
             F.lit(100).cast("decimal(38,0)") * F.col("n"),
         ).alias("rank_err"),
     )
@@ -833,32 +830,32 @@ def stats_jonckheere_terpstra_priority(spark: SparkSession, sf_dir: str) -> Data
     ng = cells.groupBy("g").agg(F.sum("c").alias("n_g"))
     grp = ng.agg(
         F.sum("n_g").alias("n"),
-        F.sum(_dec(F.col("n_g")) * F.col("n_g")).alias("sn2"),
+        F.sum(dec38(F.col("n_g")) * F.col("n_g")).alias("sn2"),
         F.sum(
-            _dec(F.col("n_g")) * (F.col("n_g") - 1) * (2 * F.col("n_g") + 5)
+            dec38(F.col("n_g")) * (F.col("n_g") - 1) * (2 * F.col("n_g") + 5)
         ).alias("ga"),
-        F.sum(_dec(F.col("n_g")) * (F.col("n_g") - 1) * (F.col("n_g") - 2)).alias(
+        F.sum(dec38(F.col("n_g")) * (F.col("n_g") - 1) * (F.col("n_g") - 2)).alias(
             "gb"
         ),
-        F.sum(_dec(F.col("n_g")) * (F.col("n_g") - 1)).alias("gd"),
+        F.sum(dec38(F.col("n_g")) * (F.col("n_g") - 1)).alias("gd"),
     )
     tv = cells.groupBy("v").agg(F.sum("c").alias("t"))
     tie = tv.agg(
         F.coalesce(
-            F.sum(_dec(F.col("t")) * (F.col("t") - 1) * (2 * F.col("t") + 5)),
+            F.sum(dec38(F.col("t")) * (F.col("t") - 1) * (2 * F.col("t") + 5)),
             F.lit(0).cast("decimal(38,0)"),
         ).alias("ta"),
         F.coalesce(
-            F.sum(_dec(F.col("t")) * (F.col("t") - 1) * (F.col("t") - 2)),
+            F.sum(dec38(F.col("t")) * (F.col("t") - 1) * (F.col("t") - 2)),
             F.lit(0).cast("decimal(38,0)"),
         ).alias("tb"),
         F.coalesce(
-            F.sum(_dec(F.col("t")) * (F.col("t") - 1)),
+            F.sum(dec38(F.col("t")) * (F.col("t") - 1)),
             F.lit(0).cast("decimal(38,0)"),
         ).alias("td"),
     )
     st = jt.crossJoin(F.broadcast(grp)).crossJoin(F.broadcast(tie))
-    nd = _dec(F.col("n"))
+    nd = dec38(F.col("n"))
     e4 = nd * F.col("n") - F.col("sn2")
     var_jt = (
         (nd * (F.col("n") - 1) * (2 * F.col("n") + 5) - F.col("ga") - F.col("ta")).cast(
@@ -966,19 +963,19 @@ def stats_bartlett_variance_priority(spark: SparkSession, sf_dir: str) -> DataFr
     )
     per = px.groupBy("g").agg(
         F.count(F.lit(1)).alias("n_g"),
-        F.sum(_dec(F.col("x"))).alias("s"),
-        F.sum(_dec(F.col("x")) * F.col("x")).alias("qq"),
+        F.sum(dec38(F.col("x"))).alias("s"),
+        F.sum(dec38(F.col("x")) * F.col("x")).alias("qq"),
     ).filter(F.col("n_g") >= 2)
 
     def tdiv(num, den):
         return (num - num % den) / den
 
-    ssnum = _dec(F.col("n_g")) * F.col("qq") - F.col("s") * F.col("s")
+    ssnum = dec38(F.col("n_g")) * F.col("qq") - F.col("s") * F.col("s")
     s2t = per.select(
         "g",
         "n_g",
-        tdiv(ssnum, _dec(F.col("n_g")) * (F.col("n_g") - 1)).cast("long").alias("s2_g"),
-        tdiv(ssnum, _dec(F.col("n_g"))).alias("ss_g"),
+        tdiv(ssnum, dec38(F.col("n_g")) * (F.col("n_g") - 1)).cast("long").alias("s2_g"),
+        tdiv(ssnum, dec38(F.col("n_g"))).alias("ss_g"),
     )
     lg = s2t.select("n_g", "ss_g", det_ln_q(F.col("s2_g")).alias("lg"))
     big = F.lit(10**18).cast("decimal(38,0)")
@@ -986,25 +983,25 @@ def stats_bartlett_variance_priority(spark: SparkSession, sf_dir: str) -> DataFr
         F.count(F.lit(1)).alias("k"),
         F.sum("n_g").alias("n"),
         F.sum(F.col("ss_g")).alias("sssum"),
-        F.sum(_dec(F.col("n_g") - 1) * F.col("lg")).alias("slg"),
-        F.sum(tdiv(big, _dec(F.col("n_g") - 1)).cast("long")).alias("invsum_u"),
+        F.sum(dec38(F.col("n_g") - 1) * F.col("lg")).alias("slg"),
+        F.sum(tdiv(big, dec38(F.col("n_g") - 1)).cast("long")).alias("invsum_u"),
     )
     pool = tot.select(
         "k",
         "n",
         "slg",
         "invsum_u",
-        tdiv(F.col("sssum"), _dec(F.col("n") - F.col("k"))).cast("long").alias("sp2"),
+        tdiv(F.col("sssum"), dec38(F.col("n") - F.col("k"))).cast("long").alias("sp2"),
     )
     lp = pool.select("*", det_ln_q(F.col("sp2")).alias("lp"))
     t_num = (
-        (_dec(F.col("n") - F.col("k")) * F.col("lp") - F.col("slg")).cast("double")
+        (dec38(F.col("n") - F.col("k")) * F.col("lp") - F.col("slg")).cast("double")
         / F.lit(1000000.0)
     )
     c_corr = F.lit(1.0) + (
         (
             F.col("invsum_u").cast("double")
-            - tdiv(big, _dec(F.col("n") - F.col("k"))).cast("double")
+            - tdiv(big, dec38(F.col("n") - F.col("k"))).cast("double")
         )
         / F.lit(1e18)
     ) / (F.lit(3.0) * (F.col("k") - 1))
@@ -1099,15 +1096,15 @@ def stats_partial_correlation_price(spark: SparkSession, sf_dir: str) -> DataFra
     )
     a = v.agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum(_dec(F.col("x"))).alias("sx"),
-        F.sum(_dec(F.col("y"))).alias("sy"),
-        F.sum(_dec(F.col("z"))).alias("sz"),
-        F.sum(_dec(F.col("x")) * F.col("x")).alias("sxx"),
-        F.sum(_dec(F.col("y")) * F.col("y")).alias("syy"),
-        F.sum(_dec(F.col("z")) * F.col("z")).alias("szz"),
-        F.sum(_dec(F.col("x")) * F.col("y")).alias("sxy"),
-        F.sum(_dec(F.col("x")) * F.col("z")).alias("sxz"),
-        F.sum(_dec(F.col("y")) * F.col("z")).alias("syz"),
+        F.sum(dec38(F.col("x"))).alias("sx"),
+        F.sum(dec38(F.col("y"))).alias("sy"),
+        F.sum(dec38(F.col("z"))).alias("sz"),
+        F.sum(dec38(F.col("x")) * F.col("x")).alias("sxx"),
+        F.sum(dec38(F.col("y")) * F.col("y")).alias("syy"),
+        F.sum(dec38(F.col("z")) * F.col("z")).alias("szz"),
+        F.sum(dec38(F.col("x")) * F.col("y")).alias("sxy"),
+        F.sum(dec38(F.col("x")) * F.col("z")).alias("sxz"),
+        F.sum(dec38(F.col("y")) * F.col("z")).alias("syz"),
     )
 
     def r(sa, sb, sab, saa, sbb):
@@ -1224,12 +1221,12 @@ def stats_cronbach_alpha_gates(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("l").cast("long").alias("sl"),
         F.sum(F.col("l") * F.col("l")).cast("long").alias("sll"),
     )
-    nd = _dec(F.col("n"))
-    vt = nd * F.col("sll") - _dec(F.col("sl")) * F.col("sl")
+    nd = dec38(F.col("n"))
+    vt = nd * F.col("sll") - dec38(F.col("sl")) * F.col("sl")
     vi = (
-        (nd * F.col("g_a") - _dec(F.col("g_a")) * F.col("g_a"))
-        + (nd * F.col("g_b") - _dec(F.col("g_b")) * F.col("g_b"))
-        + (nd * F.col("g_c") - _dec(F.col("g_c")) * F.col("g_c"))
+        (nd * F.col("g_a") - dec38(F.col("g_a")) * F.col("g_a"))
+        + (nd * F.col("g_b") - dec38(F.col("g_b")) * F.col("g_b"))
+        + (nd * F.col("g_c") - dec38(F.col("g_c")) * F.col("g_c"))
     )
     return agg.select(
         F.col("n").alias("n_docs"),
@@ -1316,8 +1313,8 @@ def stats_gumbel_daily_max_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     a = daily.agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum(_dec(F.col("m"))).alias("s"),
-        F.sum(_dec(F.col("m")) * F.col("m")).alias("q"),
+        F.sum(dec38(F.col("m"))).alias("s"),
+        F.sum(dec38(F.col("m")) * F.col("m")).alias("q"),
     ).filter(F.col("n") >= 2)
     from ..functions.exact import round_big_int_ratio
 
@@ -1337,7 +1334,7 @@ def stats_gumbel_daily_max_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     return a.select(
         F.col("n").alias("n_days"),
         round_big_int_ratio(
-            F.col("s"), _dec(F.col("n")) * F.lit(1000000)
+            F.col("s"), dec38(F.col("n")) * F.lit(1000000)
         ).alias("mean_max"),
         q6(beta_micro / F.lit(1000000.0)).alias("gumbel_beta"),
         q6(
@@ -1567,12 +1564,12 @@ def text_heaps_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sums = pts.agg(
         F.count(F.lit(1)).alias("m"),
-        F.sum(_dec(F.col("ln_n"))).alias("sx"),
-        F.sum(_dec(F.col("ln_v"))).alias("sy"),
-        F.sum(_dec(F.col("ln_n")) * F.col("ln_v")).alias("sxy"),
-        F.sum(_dec(F.col("ln_n")) * F.col("ln_n")).alias("sxx"),
+        F.sum(dec38(F.col("ln_n"))).alias("sx"),
+        F.sum(dec38(F.col("ln_v"))).alias("sy"),
+        F.sum(dec38(F.col("ln_n")) * F.col("ln_v")).alias("sxy"),
+        F.sum(dec38(F.col("ln_n")) * F.col("ln_n")).alias("sxx"),
     )
-    md = _dec(F.col("m"))
+    md = dec38(F.col("m"))
     den = md * F.col("sxx") - F.col("sx") * F.col("sx")
     beta = (md * F.col("sxy") - F.col("sx") * F.col("sy")).cast("double") / den.cast(
         "double"
@@ -1801,8 +1798,8 @@ def corpus_split_balance_kl(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("split").alias("p_split"),
             F.col("cs").alias("cp"),
             F.col("ns").alias("np_"),
-            (_dec(F.col("cs")) * F.col("nq_")).alias("lhs"),
-            (_dec(F.col("cq")) * F.col("ns")).alias("rhs"),
+            (dec38(F.col("cs")) * F.col("nq_")).alias("lhs"),
+            (dec38(F.col("cq")) * F.col("ns")).alias("rhs"),
         )
     )
     withln = pair.select(
@@ -1814,13 +1811,13 @@ def corpus_split_balance_kl(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     terms = withln.groupBy("p_split").agg(
         F.max("np_").alias("np_"),
-        F.sum(_dec(F.col("cp")) * (F.col("l1") - F.col("l2"))).alias("tsum"),
+        F.sum(dec38(F.col("cp")) * (F.col("l1") - F.col("l2"))).alias("tsum"),
     )
     return terms.select(
         F.col("p_split").alias("split"),
         F.col("np_").alias("n_smoothed"),
         round_big_int_ratio(
-            F.col("tsum"), _dec(F.col("np_")) * F.lit(1000000)
+            F.col("tsum"), dec38(F.col("np_")) * F.lit(1000000)
         ).alias("kl_vs_train"),
     )
 
@@ -1918,8 +1915,8 @@ def ml_uplift_by_engagement_tier(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(
             (F.col("n_t") > 0) & (F.col("n_c") > 0),
             round_big_int_ratio(
-                _dec(F.col("c_t")) * F.col("n_c") - _dec(F.col("c_c")) * F.col("n_t"),
-                _dec(F.col("n_t")) * F.col("n_c"),
+                dec38(F.col("c_t")) * F.col("n_c") - dec38(F.col("c_c")) * F.col("n_t"),
+                dec38(F.col("n_t")) * F.col("n_c"),
             ),
         ).alias("uplift"),
     )
@@ -2005,9 +2002,9 @@ def stats_anderson_darling_quantity(spark: SparkSession, sf_dir: str) -> DataFra
         F.sum("cx").over(w_all).alias("n"),
         F.sum("cy").over(w_all).alias("m"),
     )
-    diff = _dec(F.col("m")) * F.col("cumx") - _dec(F.col("n")) * F.col("cumy")
+    diff = dec38(F.col("m")) * F.col("cumx") - dec38(F.col("n")) * F.col("cumy")
     den = (
-        _dec(F.col("n"))
+        dec38(F.col("n"))
         * F.col("m")
         * F.col("cumt")
         * (F.col("n") + F.col("m") - F.col("cumt"))
@@ -2080,17 +2077,17 @@ def corpus_doclen_lognormal_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     a = d.agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum(_dec(F.col("l"))).alias("sl"),
-        F.sum(_dec(F.col("l")) * F.col("l")).alias("sll"),
+        F.sum(dec38(F.col("l"))).alias("sl"),
+        F.sum(dec38(F.col("l")) * F.col("l")).alias("sll"),
     )
     nd = F.col("n").cast("double")
     sig = F.sqrt(
-        (_dec(F.col("n")) * F.col("sll") - F.col("sl") * F.col("sl")).cast("double")
+        (dec38(F.col("n")) * F.col("sll") - F.col("sl") * F.col("sl")).cast("double")
         / (nd * (nd - F.lit(1.0)))
     ) / F.lit(1000000.0)
     return a.select(
         F.col("n").alias("n_docs"),
-        round_big_int_ratio(F.col("sl"), _dec(F.col("n")) * F.lit(1000000)).alias(
+        round_big_int_ratio(F.col("sl"), dec38(F.col("n")) * F.lit(1000000)).alias(
             "ln_mu"
         ),
         F.when(

@@ -7,9 +7,7 @@ several of these operators exist specifically because det-ln makes
 their log-based statistics hash-exact across engines for the first
 time (naive Bayes, Zipf fit, deterministic Laplace noise).
 
-Every operator is registered directly (@register): the evidence
-backlog is zero, so the driver window has room for the whole batch
-(see registry._DRIVER_WINDOW_PRIORITY).
+Every operator is registered directly (@register).
 """
 
 from __future__ import annotations
@@ -18,14 +16,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.exact import dec38
 from ..registry import register
 from ..tables import Tables
 
 _P = 2_147_483_647  # Mersenne prime for the portable uniform hash
-
-
-def _dec(c):
-    return c.cast("decimal(38,0)")
 
 
 # ---------------------------------------------------------------------------
@@ -114,8 +109,8 @@ def stats_ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.max(
                 F.abs(
-                    _dec(F.col("cum_a")) * _dec(F.col("n_b"))
-                    - _dec(F.col("cum_b")) * _dec(F.col("n_a"))
+                    dec38(F.col("cum_a")) * dec38(F.col("n_b"))
+                    - dec38(F.col("cum_b")) * dec38(F.col("n_a"))
                 )
             ).alias("d_num")
         )
@@ -125,7 +120,7 @@ def stats_ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_a",
         "n_b",
         round_big_int_ratio(
-            F.col("d_num"), _dec(F.col("n_a")) * _dec(F.col("n_b"))
+            F.col("d_num"), dec38(F.col("n_a")) * dec38(F.col("n_b"))
         ).alias("ks_stat"),
     )
 
@@ -311,8 +306,8 @@ def privacy_t_closeness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             "ng",
             "big_n",
             F.abs(
-                _dec(F.coalesce(F.col("c"), F.lit(0))) * _dec(F.col("big_n"))
-                - _dec(F.col("cs")) * _dec(F.col("ng"))
+                dec38(F.coalesce(F.col("c"), F.lit(0))) * dec38(F.col("big_n"))
+                - dec38(F.col("cs")) * dec38(F.col("ng"))
             ).alias("num"),
         )
     )
@@ -322,7 +317,7 @@ def privacy_t_closeness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     tv_ppm = round_big_int_ratio(
         F.col("sum_num"),
-        F.lit(2).cast("decimal(38,0)") * _dec(F.col("ng")) * _dec(F.col("big_n")),
+        F.lit(2).cast("decimal(38,0)") * dec38(F.col("ng")) * dec38(F.col("big_n")),
     ) * F.lit(1e6)
     return tv.select(
         "lang",
@@ -413,7 +408,7 @@ def events_acf_daily_lags(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "i",
         "n",
-        (_dec(F.col("n")) * _dec(F.col("y")) - _dec(F.col("s"))).alias("z"),
+        (dec38(F.col("n")) * dec38(F.col("y")) - dec38(F.col("s"))).alias("z"),
     )
     lags = spark.range(1, ACF_MAX_LAG + 1).select(F.col("id").alias("lag"))
     b = cent.select(
@@ -633,8 +628,8 @@ def stats_theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("cents").alias("cents_b"),
         F.col("i").alias("i_b"),
     )
-    num = _dec(F.col("cents_b")) - _dec(F.col("cents"))
-    den = _dec(F.col("i_b")) - _dec(F.col("i"))
+    num = dec38(F.col("cents_b")) - dec38(F.col("cents"))
+    den = dec38(F.col("i_b")) - dec38(F.col("i"))
     a_ = F.lit(20000).cast("decimal(38,0)") * F.abs(num) + den
     b_ = F.lit(2).cast("decimal(38,0)") * den
     mag = ((a_ - a_ % b_) / b_).cast("long")
@@ -772,7 +767,7 @@ def stats_spearman_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             ["event_type", "h"],
         )
-        .select("event_type", _dec(F.col("rx2")).alias("rx2"), _dec(F.col("ry2")).alias("ry2"))
+        .select("event_type", dec38(F.col("rx2")).alias("rx2"), dec38(F.col("ry2")).alias("ry2"))
     )
     s = r.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
@@ -782,7 +777,7 @@ def stats_spearman_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("ry2") * F.col("ry2")).alias("syy"),
         F.sum(F.col("rx2") * F.col("ry2")).alias("sxy"),
     )
-    n = _dec(F.col("n"))
+    n = dec38(F.col("n"))
     num = (n * F.col("sxy") - F.col("sx") * F.col("sy")).cast("double")
     denx = (n * F.col("sxx") - F.col("sx") * F.col("sx")).cast("double")
     deny = (n * F.col("syy") - F.col("sy") * F.col("sy")).cast("double")
@@ -1095,16 +1090,16 @@ def text_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n"),
         F.sum("x_q").alias("sx"),
         F.sum("y_q").alias("sy"),
-        F.sum(_dec(F.col("x_q")) * _dec(F.col("x_q"))).alias("sxx"),
-        F.sum(_dec(F.col("y_q")) * _dec(F.col("y_q"))).alias("syy"),
-        F.sum(_dec(F.col("x_q")) * _dec(F.col("y_q"))).alias("sxy"),
+        F.sum(dec38(F.col("x_q")) * dec38(F.col("x_q"))).alias("sxx"),
+        F.sum(dec38(F.col("y_q")) * dec38(F.col("y_q"))).alias("syy"),
+        F.sum(dec38(F.col("x_q")) * dec38(F.col("y_q"))).alias("sxy"),
     )
-    n = _dec(F.col("n"))
+    n = dec38(F.col("n"))
     fit = s.select(
         F.col("n").alias("n_ranks"),
-        (n * F.col("sxy") - _dec(F.col("sx")) * _dec(F.col("sy"))).alias("num"),
-        (n * F.col("sxx") - _dec(F.col("sx")) * _dec(F.col("sx"))).alias("denx"),
-        (n * F.col("syy") - _dec(F.col("sy")) * _dec(F.col("sy"))).alias("deny"),
+        (n * F.col("sxy") - dec38(F.col("sx")) * dec38(F.col("sy"))).alias("num"),
+        (n * F.col("sxx") - dec38(F.col("sx")) * dec38(F.col("sx"))).alias("denx"),
+        (n * F.col("syy") - dec38(F.col("sy")) * dec38(F.col("sy"))).alias("deny"),
     )
     r2 = (
         F.floor(
@@ -1224,10 +1219,10 @@ def stats_changepoint_binseg(spark: SparkSession, sf_dir: str) -> DataFrame:
         "d",
         F.col("i").cast("long").alias("nl"),
         (F.col("n") - F.col("i")).alias("nr"),
-        half_up_signed(_dec(F.col("sl")), _dec(F.col("i")), 100).alias("dl_q2"),
+        half_up_signed(dec38(F.col("sl")), dec38(F.col("i")), 100).alias("dl_q2"),
         half_up_signed(
-            _dec(F.col("s")) - _dec(F.col("sl")),
-            _dec(F.col("n")) - _dec(F.col("i")),
+            dec38(F.col("s")) - dec38(F.col("sl")),
+            dec38(F.col("n")) - dec38(F.col("i")),
             100,
         ).alias("dr_q2"),
     )
@@ -1334,8 +1329,8 @@ def ml_pr_auc_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("cnt").over(w).alias("n_incl"),
         F.sum("pos").over(w).alias("tp_incl"),
     )
-    num = _dec(F.lit(2_000_000_000)) * (_dec(F.col("pos")) * _dec(F.col("tp_incl")))
-    den = _dec(F.col("n_incl"))
+    num = dec38(F.lit(2_000_000_000)) * (dec38(F.col("pos")) * dec38(F.col("tp_incl")))
+    den = dec38(F.col("n_incl"))
     term_q9 = ((num + den - (num + den) % (F.lit(2).cast("decimal(38,0)") * den))
                / (F.lit(2).cast("decimal(38,0)") * den)).cast("decimal(38,0)")
     terms = c.where(F.col("pos") > 0).select("lang", term_q9.alias("term_q9"))
@@ -1344,8 +1339,8 @@ def ml_pr_auc_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.count(F.lit(1)) - F.sum("label")).alias("n_neg"),
     )
     ap = terms.groupBy("lang").agg(F.sum("term_q9").alias("sum_q9"))
-    num2 = F.lit(2).cast("decimal(38,0)") * F.col("sum_q9") + _dec(F.col("n_pos"))
-    den2 = F.lit(2).cast("decimal(38,0)") * _dec(F.col("n_pos"))
+    num2 = F.lit(2).cast("decimal(38,0)") * F.col("sum_q9") + dec38(F.col("n_pos"))
+    den2 = F.lit(2).cast("decimal(38,0)") * dec38(F.col("n_pos"))
     return (
         agg.join(ap, "lang", "left")
         .select(
@@ -1711,8 +1706,8 @@ def ml_decision_stump(spark: SparkSession, sf_dir: str) -> DataFrame:
         b["nr"].alias("n_right"),
         b["g_q"].alias("g_q"),
         round_big_int_ratio(
-            _dec(F.greatest(b["posl"], b["negl"])) + _dec(F.greatest(b["posr"], b["negr"])),
-            _dec(F.col("nt")),
+            dec38(F.greatest(b["posl"], b["negl"])) + dec38(F.greatest(b["posr"], b["negr"])),
+            dec38(F.col("nt")),
         ).alias("stump_accuracy"),
     )
 
@@ -1833,13 +1828,13 @@ def stats_kendall_tau_b(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(
                 F.when(
                     (F.col("vb_b") > F.col("vb")) & (F.col("h_b") > F.col("h")),
-                    _dec(F.col("n")) * _dec(F.col("n_b")),
+                    dec38(F.col("n")) * dec38(F.col("n_b")),
                 ).otherwise(F.lit(0).cast("decimal(38,0)"))
             ).alias("c2"),
             F.sum(
                 F.when(
                     (F.col("vb_b") > F.col("vb")) & (F.col("h_b") < F.col("h")),
-                    _dec(F.col("n")) * _dec(F.col("n_b")),
+                    dec38(F.col("n")) * dec38(F.col("n_b")),
                 ).otherwise(F.lit(0).cast("decimal(38,0)"))
             ).alias("d2"),
         )
@@ -1849,15 +1844,15 @@ def stats_kendall_tau_b(spark: SparkSession, sf_dir: str) -> DataFrame:
         cells.groupBy("event_type", "vb")
         .agg(F.sum("n").alias("rn"))
         .groupBy("event_type")
-        .agg(F.sum(_dec(F.col("rn")) * (_dec(F.col("rn")) - 1)).alias("tie_x2"))
+        .agg(F.sum(dec38(F.col("rn")) * (dec38(F.col("rn")) - 1)).alias("tie_x2"))
     )
     ty = (
         cells.groupBy("event_type", "h")
         .agg(F.sum("n").alias("rn"))
         .groupBy("event_type")
-        .agg(F.sum(_dec(F.col("rn")) * (_dec(F.col("rn")) - 1)).alias("tie_y2"))
+        .agg(F.sum(dec38(F.col("rn")) * (dec38(F.col("rn")) - 1)).alias("tie_y2"))
     )
-    nn = _dec(F.col("nn"))
+    nn = dec38(F.col("nn"))
     tau = (
         F.floor(
             (F.col("c2") - F.col("d2")).cast("double")
@@ -1946,11 +1941,11 @@ def graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = dirs.agg(
         F.count(F.lit(1)).alias("m"),
         F.sum("x").alias("sx"),
-        F.sum(_dec(F.col("x")) * _dec(F.col("x"))).alias("sxx"),
-        F.sum(_dec(F.col("x")) * _dec(F.col("y"))).alias("sxy"),
+        F.sum(dec38(F.col("x")) * dec38(F.col("x"))).alias("sxx"),
+        F.sum(dec38(F.col("x")) * dec38(F.col("y"))).alias("sxy"),
     )
-    m = _dec(F.col("m"))
-    sx = _dec(F.col("sx"))
+    m = dec38(F.col("m"))
+    sx = dec38(F.col("sx"))
     r = (
         F.floor(
             (m * F.col("sxy") - sx * sx).cast("double")

@@ -22,12 +22,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.exact import dec38
 from ..registry import register
 from ..tables import Tables
-
-
-def _dec(c):
-    return c.cast("decimal(38,0)")
 
 
 # ---------------------------------------------------------------------------
@@ -96,8 +93,8 @@ def stats_hhi_supplier_concentration(
     )
     agg = rev.groupBy("s_nationkey").agg(
         F.count(F.lit(1)).alias("n_suppliers"),
-        F.sum(_dec(F.col("cents")) * _dec(F.col("cents"))).alias("sq"),
-        F.sum(_dec(F.col("cents"))).alias("tot"),
+        F.sum(dec38(F.col("cents")) * dec38(F.col("cents"))).alias("sq"),
+        F.sum(dec38(F.col("cents"))).alias("tot"),
     )
     return (
         agg.join(
@@ -108,7 +105,7 @@ def stats_hhi_supplier_concentration(
             F.col("n_name").alias("nation"),
             "n_suppliers",
             round_big_int_ratio(
-                F.col("sq"), _dec(F.col("tot")) * _dec(F.col("tot"))
+                F.col("sq"), dec38(F.col("tot")) * dec38(F.col("tot"))
             ).alias("hhi"),
         )
         .orderBy("nation")
@@ -204,11 +201,11 @@ def stats_cramers_v_priority_status(
     )
     j = m.crossJoin(F.broadcast(tot))
     num = (
-        _dec(F.col("o")) * _dec(F.col("n"))
-        - _dec(F.col("r")) * _dec(F.col("cc"))
+        dec38(F.col("o")) * dec38(F.col("n"))
+        - dec38(F.col("r")) * dec38(F.col("cc"))
     ).cast("double")
     den = (
-        _dec(F.col("n")) * _dec(F.col("r")) * _dec(F.col("cc"))
+        dec38(F.col("n")) * dec38(F.col("r")) * dec38(F.col("cc"))
     ).cast("double")
     terms = j.select(
         "n",
@@ -294,9 +291,9 @@ def stats_overdispersion_vmr(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = daily.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
         F.sum("c").alias("s"),
-        F.sum(_dec(F.col("c")) * _dec(F.col("c"))).alias("q"),
+        F.sum(dec38(F.col("c")) * dec38(F.col("c"))).alias("q"),
     )
-    n, s, q = _dec(F.col("n")), _dec(F.col("s")), F.col("q")
+    n, s, q = dec38(F.col("n")), dec38(F.col("s")), F.col("q")
     return agg.select(
         "event_type",
         F.col("n").alias("n_days"),
@@ -508,19 +505,19 @@ def events_interarrival_burstiness(
     agg = gaps.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
         F.sum("gap").alias("s"),
-        F.sum(_dec(F.col("gap")) * _dec(F.col("gap"))).alias("q"),
+        F.sum(dec38(F.col("gap")) * dec38(F.col("gap"))).alias("q"),
     )
     from ..functions.exact import round_big_int_ratio
 
-    var_num = (_dec(F.col("n")) * F.col("q")
-               - _dec(F.col("s")) * _dec(F.col("s"))).cast("double")
+    var_num = (dec38(F.col("n")) * F.col("q")
+               - dec38(F.col("s")) * dec38(F.col("s"))).cast("double")
     sd = F.sqrt(var_num)
     s_d = F.col("s").cast("double")
     b = (sd - s_d) / (sd + s_d)
     return agg.select(
         "event_type",
         F.col("n").alias("n_gaps"),
-        round_big_int_ratio(_dec(F.col("s")), _dec(F.col("n"))).alias(
+        round_big_int_ratio(dec38(F.col("s")), dec38(F.col("n"))).alias(
             "mean_gap_s"
         ),
         (F.floor(b * F.lit(1_000_000.0) + F.lit(0.5)).cast("long")
@@ -581,14 +578,14 @@ def ml_brier_score_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     r = F.col("score_q") - F.lit(10000) * F.col("label")
     agg = s.groupBy("lang").agg(
         F.count(F.lit(1)).alias("n_docs"),
-        F.sum(_dec(r) * _dec(r)).alias("sse_q"),
+        F.sum(dec38(r) * dec38(r)).alias("sse_q"),
     )
     return agg.select(
         "lang",
         "n_docs",
         round_big_int_ratio(
             F.col("sse_q"),
-            F.lit(100_000_000).cast("decimal(38,0)") * _dec(F.col("n_docs")),
+            F.lit(100_000_000).cast("decimal(38,0)") * dec38(F.col("n_docs")),
         ).alias("brier"),
     ).orderBy("lang")
 
@@ -675,9 +672,9 @@ def ml_mcc_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
     degenerate = (
         ((tp + fp) == 0) | ((tp + fn) == 0) | ((tn + fp) == 0) | ((tn + fn) == 0)
     )
-    num = (_dec(tp) * _dec(tn) - _dec(fp) * _dec(fn)).cast("double")
+    num = (dec38(tp) * dec38(tn) - dec38(fp) * dec38(fn)).cast("double")
     den = F.sqrt(
-        (_dec(tp + fp) * _dec(tp + fn) * _dec(tn + fp) * _dec(tn + fn)).cast(
+        (dec38(tp + fp) * dec38(tp + fn) * dec38(tn + fp) * dec38(tn + fn)).cast(
             "double"
         )
     )
@@ -747,9 +744,9 @@ def ml_cohens_kappa_gates(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = Tables(spark, sf_dir)
     c = _confusion_df(t)
     tp, fp, tn, fn, n = (F.col(x) for x in ("tp", "fp", "tn", "fn", "n"))
-    pe = _dec(tp + fp) * _dec(tp + fn) + _dec(fn + tn) * _dec(fp + tn)
-    num = _dec(n) * _dec(tp + tn) - pe
-    den = _dec(n) * _dec(n) - pe
+    pe = dec38(tp + fp) * dec38(tp + fn) + dec38(fn + tn) * dec38(fp + tn)
+    num = dec38(n) * dec38(tp + tn) - pe
+    den = dec38(n) * dec38(n) - pe
     kappa = F.when(den == F.lit(0).cast("decimal(38,0)"), F.lit(0.0)).otherwise(
         round_big_int_ratio(num, den)
     )
@@ -835,8 +832,8 @@ def ml_lift_deciles_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     j = per.join(tot, "lang")
     lift = F.when(F.col("pos_all") == 0, F.lit(None).cast("double")).otherwise(
         round_big_int_ratio(
-            _dec(F.col("n_pos")) * _dec(F.col("n_all")),
-            _dec(F.col("n_docs")) * _dec(F.col("pos_all")),
+            dec38(F.col("n_pos")) * dec38(F.col("n_all")),
+            dec38(F.col("n_docs")) * dec38(F.col("pos_all")),
         )
     )
     return j.select(
@@ -844,7 +841,7 @@ def ml_lift_deciles_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
         "decile",
         "n_docs",
         "n_pos",
-        round_big_int_ratio(_dec(F.col("n_pos")), _dec(F.col("n_docs"))).alias(
+        round_big_int_ratio(dec38(F.col("n_pos")), dec38(F.col("n_docs"))).alias(
             "pos_rate"
         ),
         lift.alias("lift"),
@@ -931,8 +928,8 @@ def ml_score_ks_separation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.max(
                 F.abs(
-                    _dec(F.col("cum_p")) * _dec(F.col("n_neg"))
-                    - _dec(F.col("cum_n")) * _dec(F.col("n_pos"))
+                    dec38(F.col("cum_p")) * dec38(F.col("n_neg"))
+                    - dec38(F.col("cum_n")) * dec38(F.col("n_pos"))
                 )
             ).alias("d_num")
         )
@@ -942,7 +939,7 @@ def ml_score_ks_separation(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(None).cast("double"),
     ).otherwise(
         round_big_int_ratio(
-            F.col("d_num"), _dec(F.col("n_pos")) * _dec(F.col("n_neg"))
+            F.col("d_num"), dec38(F.col("n_pos")) * dec38(F.col("n_neg"))
         )
     )
     return d.select("lang", "n_pos", "n_neg", ks.alias("ks_stat")).orderBy(
@@ -1555,22 +1552,22 @@ def ml_split_quality_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     l1, l0, r1, r0 = (F.col(x) for x in ("l1", "l0", "r1", "r0"))
     n_l, n_r = l1 + l0, r1 + r0
     big_n = n_l + n_r
-    s_l = _dec(l1) * _dec(l1) + _dec(l0) * _dec(l0)
-    s_r = _dec(r1) * _dec(r1) + _dec(r0) * _dec(r0)
-    s_p = (_dec(l1 + r1) * _dec(l1 + r1)
-           + _dec(l0 + r0) * _dec(l0 + r0))
+    s_l = dec38(l1) * dec38(l1) + dec38(l0) * dec38(l0)
+    s_r = dec38(r1) * dec38(r1) + dec38(r0) * dec38(r0)
+    s_p = (dec38(l1 + r1) * dec38(l1 + r1)
+           + dec38(l0 + r0) * dec38(l0 + r0))
     gini_split = round_big_int_ratio(
-        _dec(n_r) * (_dec(n_l) * _dec(n_l) - s_l)
-        + _dec(n_l) * (_dec(n_r) * _dec(n_r) - s_r),
-        _dec(big_n) * _dec(n_l) * _dec(n_r),
+        dec38(n_r) * (dec38(n_l) * dec38(n_l) - s_l)
+        + dec38(n_l) * (dec38(n_r) * dec38(n_r) - s_r),
+        dec38(big_n) * dec38(n_l) * dec38(n_r),
     )
     gini_parent = round_big_int_ratio(
-        _dec(big_n) * _dec(big_n) - s_p, _dec(big_n) * _dec(big_n)
+        dec38(big_n) * dec38(big_n) - s_p, dec38(big_n) * dec38(big_n)
     )
     # n/N-weighted entropy mix, half-up on the exact integer ratio
-    wnum = _dec(n_l) * _dec(F.col("h_l")) + _dec(n_r) * _dec(F.col("h_r"))
-    a = F.lit(2).cast("decimal(38,0)") * wnum + _dec(big_n)
-    b = F.lit(2).cast("decimal(38,0)") * _dec(big_n)
+    wnum = dec38(n_l) * dec38(F.col("h_l")) + dec38(n_r) * dec38(F.col("h_r"))
+    a = F.lit(2).cast("decimal(38,0)") * wnum + dec38(big_n)
+    b = F.lit(2).cast("decimal(38,0)") * dec38(big_n)
     h_mix_q = ((a - a % b) / b).cast("long")
     return wide.select(
         "threshold",
@@ -1679,7 +1676,7 @@ def graph_modularity_lpa(spark: SparkSession, sf_dir: str) -> DataFrame:
         labels.join(deg, "node")
         .groupBy("label")
         .agg(F.sum("degree").alias("dc"))
-        .agg(F.sum(_dec(F.col("dc")) * _dec(F.col("dc"))).alias("sum_d2"))
+        .agg(F.sum(dec38(F.col("dc")) * dec38(F.col("dc"))).alias("sum_d2"))
     )
     com = labels.agg(F.countDistinct("label").alias("n_communities"))
     j = (
@@ -1687,8 +1684,8 @@ def graph_modularity_lpa(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(intra))
         .crossJoin(F.broadcast(dsq))
     )
-    me = _dec(F.col("m_edges"))
-    num = F.lit(4).cast("decimal(38,0)") * me * _dec(F.col("l_in")) - F.col(
+    me = dec38(F.col("m_edges"))
+    num = F.lit(4).cast("decimal(38,0)") * me * dec38(F.col("l_in")) - F.col(
         "sum_d2"
     )
     den = F.lit(4).cast("decimal(38,0)") * me * me

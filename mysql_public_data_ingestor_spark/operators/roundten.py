@@ -1,12 +1,7 @@
-"""Round-9 second operator batch (queue-structured, ACTIVATED in
-round 9).
+"""Round-9 operator batch B.
 
-Built and fully gated mid-round as a round-10 bank (oracle parity,
-plan checks, fuzz profiles, replica tests via
-``tests/test_roundten.py``), then activated in the SAME round: the
-banking pattern exists for FULL driver windows, and round 9's window
-closed at 48/50 with these included — registering now gets all six
-driver-verified a round earlier.
+Gates: oracle parity, plan checks, fuzz profiles and replica tests in
+``tests/test_roundten.py``.
 
 Batch theme: remaining family corners — Page's trend test (the
 ordered-alternative member of the Friedman block design), linear
@@ -25,36 +20,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.exact import dec38
+from ..registry import register
 from ..tables import Tables
-
-QUEUE: list[tuple] = []
-
-
-def _queued(name: str, oracle: str):
-    def deco(fn):
-        QUEUE.append((name, fn, oracle, fn.__doc__ or ""))
-        return fn
-
-    return deco
-
-
-_ACTIVATED = False
-
-
-def activate() -> None:
-    """Register every queued query (round-10 switch; idempotent)."""
-    global _ACTIVATED
-    if _ACTIVATED:
-        return
-    from ..registry import register
-
-    for name, fn, oracle, doc in QUEUE:
-        register(name, oracle=oracle, doc=doc)(fn)
-    _ACTIVATED = True
-
-
-def _dec(c):
-    return c.cast("decimal(38,0)")
 
 
 # ---------------------------------------------------------------------------
@@ -104,7 +72,7 @@ def _page_l_oracle() -> str:
     """
 
 
-@_queued("stats_page_trend_l", oracle=_page_l_oracle())
+@register("stats_page_trend_l", oracle=_page_l_oracle())
 def stats_page_trend_l(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Page's L trend test for an ORDERED priority effect on mean
     order value, blocked by customer nation: L = sum_j j * R_j over
@@ -138,7 +106,7 @@ def stats_page_trend_l(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("blk", "trt")
         .agg(
             F.count(F.lit(1)).alias("n_cell"),
-            F.sum(_dec(F.col("cents"))).alias("s_cell"),
+            F.sum(dec38(F.col("cents"))).alias("s_cell"),
         )
     )
     kk = cells.agg(F.countDistinct("trt").alias("k"))
@@ -236,7 +204,7 @@ def _linear_counting_oracle_full() -> str:
     return _linear_counting_oracle().replace("{LN_M}", base).replace("{LN_V}", est)
 
 
-@_queued("sketch_linear_counting_users", oracle=_linear_counting_oracle_full())
+@register("sketch_linear_counting_users", oracle=_linear_counting_oracle_full())
 def sketch_linear_counting_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Linear counting estimate of distinct event users: hash users
     into an m=4096-bucket bitmap and estimate D = m ln(m/V) from the
@@ -336,7 +304,7 @@ def _hazard_oracle() -> str:
     """
 
 
-@_queued("events_churn_hazard_by_tenure", oracle=_hazard_oracle())
+@register("events_churn_hazard_by_tenure", oracle=_hazard_oracle())
 def events_churn_hazard_by_tenure(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Discrete churn hazard by tenure week: h(w) = users last seen
     exactly w weeks after their first activity (with enough
@@ -435,7 +403,7 @@ def _benford2_oracle() -> str:
     """
 
 
-@_queued("dq_benford_second_digit_totals", oracle=_benford2_oracle())
+@register("dq_benford_second_digit_totals", oracle=_benford2_oracle())
 def dq_benford_second_digit_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benford SECOND-digit audit of order totals: observed vs
     expected distribution of the second significant digit of the
@@ -516,7 +484,7 @@ def _payload_dedup_oracle() -> str:
     """
 
 
-@_queued("multimodal_payload_dedup_manifest", oracle=_payload_dedup_oracle())
+@register("multimodal_payload_dedup_manifest", oracle=_payload_dedup_oracle())
 def multimodal_payload_dedup_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Content-addressed dedup manifest for opaque binary payloads:
     group payloads by content hash, surface the duplicate groups that
@@ -592,7 +560,7 @@ def _gamma_oracle() -> str:
     """
 
 
-@_queued("stats_gamma_latency_fit_moments", oracle=_gamma_oracle())
+@register("stats_gamma_latency_fit_moments", oracle=_gamma_oracle())
 def stats_gamma_latency_fit_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gamma(shape k, scale theta) method-of-moments fit of
     order-to-ship latency: k = mean^2/var, theta = var/mean — the
@@ -617,8 +585,8 @@ def stats_gamma_latency_fit_moments(spark: SparkSession, sf_dir: str) -> DataFra
     )
     a = lat.agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum(_dec(F.col("v"))).alias("s"),
-        F.sum(_dec(F.col("v")) * F.col("v")).alias("q"),
+        F.sum(dec38(F.col("v"))).alias("s"),
+        F.sum(dec38(F.col("v")) * F.col("v")).alias("q"),
     ).filter(F.col("n") >= 2)
     nd = F.col("n").cast("double")
     mean = F.col("s").cast("double") / nd

@@ -26,12 +26,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.exact import dec38
 from ..registry import register
 from ..tables import Tables
-
-
-def _dec(c):
-    return c.cast("decimal(38,0)")
 
 
 # ---------------------------------------------------------------------------
@@ -177,7 +174,7 @@ def sketch_ddsketch_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         "achieved_rank",
         round_big_int_ratio(
             F.abs(
-                F.lit(100) * _dec(F.col("achieved_rank")) - _dec(F.col("q")) * F.col("n")
+                F.lit(100) * dec38(F.col("achieved_rank")) - dec38(F.col("q")) * F.col("n")
             ),
             F.lit(100).cast("decimal(38,0)") * F.col("n"),
         ).alias("rank_err"),
@@ -352,8 +349,8 @@ def corpus_stratified_sample_audit(spark: SparkSession, sf_dir: str) -> DataFram
         .select(
             "lang",
             F.abs(
-                _dec(F.coalesce(F.col("s"), F.lit(0))) * F.col("n_docs")
-                - _dec(F.col("p")) * F.col("target_k")
+                dec38(F.coalesce(F.col("s"), F.lit(0))) * F.col("n_docs")
+                - dec38(F.col("p")) * F.col("target_k")
             ).alias("d"),
         )
         .groupBy("lang")
@@ -570,7 +567,7 @@ def stats_quade_nation_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("blk", "trt")
         .agg(
             F.count(F.lit(1)).alias("n_cell"),
-            F.sum(_dec(F.col("cents"))).alias("s_cell"),
+            F.sum(dec38(F.col("cents"))).alias("s_cell"),
         )
     )
     kk = cells.agg(F.countDistinct("trt").alias("k"))
@@ -603,7 +600,7 @@ def stats_quade_nation_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(kk))
         .select(
             "trt",
-            (_dec(F.col("qr")) * (2 * F.col("r") - (F.col("k") + 1))).alias("t_ij"),
+            (dec38(F.col("qr")) * (2 * F.col("r") - (F.col("k") + 1))).alias("t_ij"),
         )
     )
     b = complete.agg(F.count(F.lit(1)).alias("b"))
@@ -615,7 +612,7 @@ def stats_quade_nation_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(agg))
         .crossJoin(F.broadcast(bstat))
     )
-    den = _dec(F.col("b")) * F.col("a2") - F.col("b2")
+    den = dec38(F.col("b")) * F.col("a2") - F.col("b2")
     return out.select(
         "k",
         F.col("b").alias("n_blocks"),
@@ -623,7 +620,7 @@ def stats_quade_nation_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("b2").cast("long").alias("b2"),
         F.when(
             den > 0,
-            round_big_int_ratio(_dec(F.col("b") - 1) * F.col("b2"), den),
+            round_big_int_ratio(dec38(F.col("b") - 1) * F.col("b2"), den),
         ).alias("quade_f"),
     )
 
@@ -715,8 +712,8 @@ def stats_total_variation_segment_pairs(spark: SparkSession, sf_dir: str) -> Dat
         .agg(
             F.sum(
                 F.abs(
-                    _dec(F.col("cnt_a")) * F.col("n_b")
-                    - _dec(F.col("cnt_b")) * F.col("n_a")
+                    dec38(F.col("cnt_a")) * F.col("n_b")
+                    - dec38(F.col("cnt_b")) * F.col("n_a")
                 )
             ).alias("num")
         )
@@ -960,7 +957,7 @@ def dq_bloom_fpp_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_keys",
         "bits_set",
         round_big_int_ratio(
-            _dec(F.col("bits_set")) * F.col("bits_set") * F.col("bits_set"),
+            dec38(F.col("bits_set")) * F.col("bits_set") * F.col("bits_set"),
             F.lit(m).cast("decimal(38,0)") * m * m,
         ).alias("fpp_est"),
         "n_probes",
@@ -1050,24 +1047,24 @@ def events_variance_ratio_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     m1 = d1.agg(
         F.count(F.lit(1)).alias("n1"),
         F.sum("d").alias("sd"),
-        F.sum(_dec(F.col("d")) * F.col("d")).alias("sdd"),
+        F.sum(dec38(F.col("d")) * F.col("d")).alias("sdd"),
     )
     mq = dq.agg(
         F.count(F.lit(1)).alias("nq"),
         F.sum("s").alias("ss"),
-        F.sum(_dec(F.col("s")) * F.col("s")).alias("ssq"),
+        F.sum(dec38(F.col("s")) * F.col("s")).alias("ssq"),
     )
     out = m1.crossJoin(F.broadcast(mq))
     num = (
-        _dec(F.col("n1"))
+        dec38(F.col("n1"))
         * F.col("n1")
-        * (_dec(F.col("nq")) * F.col("ssq") - _dec(F.col("ss")) * F.col("ss"))
+        * (dec38(F.col("nq")) * F.col("ssq") - dec38(F.col("ss")) * F.col("ss"))
     )
     den = (
         F.lit(q).cast("decimal(38,0)")
         * F.col("nq")
         * F.col("nq")
-        * (_dec(F.col("n1")) * F.col("sdd") - _dec(F.col("sd")) * F.col("sd"))
+        * (dec38(F.col("n1")) * F.col("sdd") - dec38(F.col("sd")) * F.col("sd"))
     )
     return out.select(
         F.lit(q).cast("long").alias("q"),
@@ -1076,7 +1073,7 @@ def events_variance_ratio_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(
             (F.col("n1") > 0)
             & (F.col("nq") > 0)
-            & (_dec(F.col("n1")) * F.col("sdd") - _dec(F.col("sd")) * F.col("sd") > 0),
+            & (dec38(F.col("n1")) * F.col("sdd") - dec38(F.col("sd")) * F.col("sd") > 0),
             round_big_int_ratio(num, den),
         ).alias("variance_ratio"),
     )
@@ -1161,11 +1158,11 @@ def events_user_activity_lorenz_deciles(spark: SparkSession, sf_dir: str) -> Dat
         .groupBy("c", "nu")
         .agg(
             F.sum("nu2").alias("cu"),
-            F.sum(_dec(F.col("nu2")) * F.col("c2")).alias("ce"),
+            F.sum(dec38(F.col("nu2")) * F.col("c2")).alias("ce"),
         )
     )
     tot = coc.agg(
-        F.sum("nu").alias("u"), F.sum(_dec(F.col("nu")) * F.col("c")).alias("e")
+        F.sum("nu").alias("u"), F.sum(dec38(F.col("nu")) * F.col("c")).alias("e")
     )
     dec = spark.range(1, 11).select(F.col("id").alias("decile"))
     per = dec.crossJoin(F.broadcast(tot)).select(
@@ -1187,8 +1184,8 @@ def events_user_activity_lorenz_deciles(spark: SparkSession, sf_dir: str) -> Dat
         per.crossJoin(F.broadcast(cum))
         .groupBy("decile", "hi", "lo", "e")
         .agg(
-            F.sum(_dec(ov) * F.col("c")).alias("events_d"),
-            F.sum(_dec(ov_cum) * F.col("c")).alias("events_cum"),
+            F.sum(dec38(ov) * F.col("c")).alias("events_d"),
+            F.sum(dec38(ov_cum) * F.col("c")).alias("events_cum"),
         )
     )
     return ev.select(
@@ -1596,7 +1593,7 @@ def embedding_dim_correlation_topk(spark: SparkSession, sf_dir: str) -> DataFram
     dims = ex.groupBy("pos").agg(
         F.count(F.lit(1)).alias("n"),
         F.sum("xq").alias("sx"),
-        F.sum(_dec(F.col("xq")) * F.col("xq")).alias("sxx"),
+        F.sum(dec38(F.col("xq")) * F.col("xq")).alias("sxx"),
     )
     b = ex.select(
         "vec_id", F.col("pos").alias("pos_j"), F.col("xq").alias("xq_j")
@@ -1605,7 +1602,7 @@ def embedding_dim_correlation_topk(spark: SparkSession, sf_dir: str) -> DataFram
         ex.join(b, "vec_id")
         .filter(F.col("pos") < F.col("pos_j"))
         .groupBy(F.col("pos").alias("i"), F.col("pos_j").alias("j"))
-        .agg(F.sum(_dec(F.col("xq")) * F.col("xq_j")).alias("sxy"))
+        .agg(F.sum(dec38(F.col("xq")) * F.col("xq_j")).alias("sxy"))
     )
     di = dims.select(
         F.col("pos").alias("i"), F.col("n").alias("n"),
@@ -1620,11 +1617,11 @@ def embedding_dim_correlation_topk(spark: SparkSession, sf_dir: str) -> DataFram
         .join(F.broadcast(dj), "j")
         .select(
             "i", "j", "n",
-            (_dec(F.col("n")) * F.col("sxy") - _dec(F.col("sx_i")) * F.col("sx_j"))
+            (dec38(F.col("n")) * F.col("sxy") - dec38(F.col("sx_i")) * F.col("sx_j"))
             .alias("cov_num"),
-            (_dec(F.col("n")) * F.col("sxx_i") - _dec(F.col("sx_i")) * F.col("sx_i"))
+            (dec38(F.col("n")) * F.col("sxx_i") - dec38(F.col("sx_i")) * F.col("sx_i"))
             .alias("var_i"),
-            (_dec(F.col("n")) * F.col("sxx_j") - _dec(F.col("sx_j")) * F.col("sx_j"))
+            (dec38(F.col("n")) * F.col("sxx_j") - dec38(F.col("sx_j")) * F.col("sx_j"))
             .alias("var_j"),
         )
         .filter((F.col("var_i") > 0) & (F.col("var_j") > 0))
@@ -1722,7 +1719,7 @@ def corpus_dedup_cluster_powerlaw(spark: SparkSession, sf_dir: str) -> DataFrame
     )
     agg = szs.agg(
         F.count(F.lit(1)).alias("n_tail"),
-        F.sum(_dec(F.col("lm")) - F.lit(l15)).alias("dsum"),
+        F.sum(dec38(F.col("lm")) - F.lit(l15)).alias("dsum"),
     )
     tots = grp.agg(
         F.count(F.lit(1)).alias("n_clusters"),
@@ -1737,7 +1734,7 @@ def corpus_dedup_cluster_powerlaw(spark: SparkSession, sf_dir: str) -> DataFrame
         F.when(
             F.col("dsum") > 0,
             round_big_int_ratio(
-                F.col("dsum") + _dec(F.col("n_tail")) * F.lit(1000000), F.col("dsum")
+                F.col("dsum") + dec38(F.col("n_tail")) * F.lit(1000000), F.col("dsum")
             ),
         ).alias("alpha"),
     )
@@ -1902,7 +1899,7 @@ def ml_gains_at_capacity(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("b.cpos").alias("cpos_b"),
         )
     )
-    cap_num = _dec(F.col("tp_prev")) * F.col("cnt_b") + _dec(
+    cap_num = dec38(F.col("tp_prev")) * F.col("cnt_b") + dec38(
         F.col("k") - F.col("cc_prev")
     ) * F.col("cpos_b")
     return fin.select(
@@ -1911,13 +1908,13 @@ def ml_gains_at_capacity(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("pos").alias("n_pos"),
         F.when(
             (F.col("pos") > 0) & (F.col("cnt_b") > 0),
-            round_big_int_ratio(cap_num, _dec(F.col("pos")) * F.col("cnt_b")),
+            round_big_int_ratio(cap_num, dec38(F.col("pos")) * F.col("cnt_b")),
         ).alias("gain"),
         F.when(
             (F.col("pos") > 0) & (F.col("cnt_b") > 0) & (F.col("k") > 0),
             round_big_int_ratio(
                 cap_num * F.col("n"),
-                _dec(F.col("pos")) * F.col("cnt_b") * F.col("k"),
+                dec38(F.col("pos")) * F.col("cnt_b") * F.col("k"),
             ),
         ).alias("lift"),
     )
@@ -1987,7 +1984,7 @@ def stats_cusum_squares_changepoint(spark: SparkSession, sf_dir: str) -> DataFra
     )
     nn = daily.agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum(_dec(F.col("x")) * F.col("x")).alias("s"),
+        F.sum(dec38(F.col("x")) * F.col("x")).alias("s"),
     )
     b = daily.select(F.col("day").alias("day_b"), F.col("x").alias("x_b"))
     idx = (
@@ -1995,7 +1992,7 @@ def stats_cusum_squares_changepoint(spark: SparkSession, sf_dir: str) -> DataFra
         .groupBy("day")
         .agg(
             F.count(F.lit(1)).alias("k"),
-            F.sum(_dec(F.col("x_b")) * F.col("x_b")).alias("sk"),
+            F.sum(dec38(F.col("x_b")) * F.col("x_b")).alias("sk"),
         )
     )
     dev = idx.crossJoin(F.broadcast(nn)).select(
@@ -2003,7 +2000,7 @@ def stats_cusum_squares_changepoint(spark: SparkSession, sf_dir: str) -> DataFra
         "k",
         "n",
         "s",
-        F.abs(_dec(F.col("n")) * F.col("sk") - _dec(F.col("k")) * F.col("s")).alias(
+        F.abs(dec38(F.col("n")) * F.col("sk") - dec38(F.col("k")) * F.col("s")).alias(
             "num"
         ),
     )
@@ -2018,7 +2015,7 @@ def stats_cusum_squares_changepoint(spark: SparkSession, sf_dir: str) -> DataFra
         F.col("b.k").alias("change_index"),
         F.when(
             (F.col("b.n") > 0) & (F.col("b.s") > 0),
-            round_big_int_ratio(F.col("b.num"), _dec(F.col("b.n")) * F.col("b.s")),
+            round_big_int_ratio(F.col("b.num"), dec38(F.col("b.n")) * F.col("b.s")),
         ).alias("cusum_sq_stat"),
     )
     return best
@@ -2202,9 +2199,9 @@ def dedup_lsh_band_tuning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         hist.join(F.broadcast(curve), "bin")
         .groupBy("r", "b")
         .agg(
-            F.sum(_dec(F.col("n_b")) * F.col("p_num")).alias("det_num"),
+            F.sum(dec38(F.col("n_b")) * F.col("p_num")).alias("det_num"),
             F.sum(
-                F.when(F.col("bin") >= 5, _dec(F.col("n_b")) * F.col("p_num")).otherwise(
+                F.when(F.col("bin") >= 5, dec38(F.col("n_b")) * F.col("p_num")).otherwise(
                     F.lit(0).cast("decimal(38,0)")
                 )
             ).alias("det_hi_num"),
@@ -2218,11 +2215,11 @@ def dedup_lsh_band_tuning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n_hi").alias("n_pairs_hi"),
         F.when(
             F.col("n") > 0,
-            round_big_int_ratio(F.col("det_num"), _dec(F.col("n")) * d_lit),
+            round_big_int_ratio(F.col("det_num"), dec38(F.col("n")) * d_lit),
         ).alias("expected_detected"),
         F.when(
             F.col("n_hi") > 0,
-            round_big_int_ratio(F.col("det_hi_num"), _dec(F.col("n_hi")) * d_lit),
+            round_big_int_ratio(F.col("det_hi_num"), dec38(F.col("n_hi")) * d_lit),
         ).alias("expected_detected_hi"),
     )
 
@@ -2320,7 +2317,7 @@ def stats_mantel_haenszel_priority_nation(spark: SparkSession, sf_dir: str) -> D
         "sum_bc_q",
         F.when(
             F.col("sum_bc_q") > 0,
-            round_big_int_ratio(_dec(F.col("sum_ad_q")), _dec(F.col("sum_bc_q"))),
+            round_big_int_ratio(dec38(F.col("sum_ad_q")), dec38(F.col("sum_bc_q"))),
         ).alias("mh_odds_ratio"),
     )
 
@@ -2802,10 +2799,10 @@ def text_unigram_js_lang_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     lm = det_ln_q((F.col("ca") * F.col("n_b") + F.col("cb") * F.col("n_a")).cast("double"))
     terms = cells.select(
         "lang_a", "lang_b", "n_a", "n_b",
-        F.when(F.col("ca") > 0, _dec(F.col("ca")) * (lpa - lm))
+        F.when(F.col("ca") > 0, dec38(F.col("ca")) * (lpa - lm))
         .otherwise(F.lit(0).cast("decimal(38,0)"))
         .alias("ta"),
-        F.when(F.col("cb") > 0, _dec(F.col("cb")) * (lqb - lm))
+        F.when(F.col("cb") > 0, dec38(F.col("cb")) * (lqb - lm))
         .otherwise(F.lit(0).cast("decimal(38,0)"))
         .alias("tb"),
     ).groupBy("lang_a", "lang_b", "n_a", "n_b").agg(
@@ -2918,10 +2915,10 @@ def stats_permutation_test_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
     obs = ux.agg(
         F.count(F.lit(1)).alias("n_users"),
         F.sum(F.when(F.col("user_id") % 2 == 0, 1).otherwise(0)).alias("na"),
-        F.sum(F.when(F.col("user_id") % 2 == 0, _dec(F.col("x"))).otherwise(
+        F.sum(F.when(F.col("user_id") % 2 == 0, dec38(F.col("x"))).otherwise(
             F.lit(0).cast("decimal(38,0)"))).alias("sa"),
         F.sum(F.when(F.col("user_id") % 2 == 1, 1).otherwise(0)).alias("nb"),
-        F.sum(F.when(F.col("user_id") % 2 == 1, _dec(F.col("x"))).otherwise(
+        F.sum(F.when(F.col("user_id") % 2 == 1, dec38(F.col("x"))).otherwise(
             F.lit(0).cast("decimal(38,0)"))).alias("sb"),
     )
     bs = spark.range(B).select(F.col("id").alias("b"))
@@ -2940,10 +2937,10 @@ def stats_permutation_test_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("b")
         .agg(
             F.sum(F.when(F.col("g") == 0, 1).otherwise(0)).alias("na"),
-            F.sum(F.when(F.col("g") == 0, _dec(F.col("x"))).otherwise(
+            F.sum(F.when(F.col("g") == 0, dec38(F.col("x"))).otherwise(
                 F.lit(0).cast("decimal(38,0)"))).alias("sa"),
             F.sum(F.when(F.col("g") == 1, 1).otherwise(0)).alias("nb"),
-            F.sum(F.when(F.col("g") == 1, _dec(F.col("x"))).otherwise(
+            F.sum(F.when(F.col("g") == 1, dec38(F.col("x"))).otherwise(
                 F.lit(0).cast("decimal(38,0)"))).alias("sb"),
         )
     )
@@ -2957,11 +2954,11 @@ def stats_permutation_test_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("na") > 0) & (F.col("nb") > 0)
             & (
                 F.abs(F.col("sa") * F.col("nb") - F.col("sb") * F.col("na"))
-                * (_dec(F.col("o_na")) * F.col("o_nb"))
+                * (dec38(F.col("o_na")) * F.col("o_nb"))
                 >= F.abs(
                     F.col("o_sa") * F.col("o_nb") - F.col("o_sb") * F.col("o_na")
                 )
-                * (_dec(F.col("na")) * F.col("nb"))
+                * (dec38(F.col("na")) * F.col("nb"))
             )
         )
         .agg(F.count(F.lit(1)).alias("n_exceed"))
@@ -2973,7 +2970,7 @@ def stats_permutation_test_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("na") > 0) & (F.col("nb") > 0),
             round_big_int_ratio(
                 F.col("sa") * F.col("nb") - F.col("sb") * F.col("na"),
-                _dec(F.col("na")) * F.col("nb") * 1000000,
+                dec38(F.col("na")) * F.col("nb") * 1000000,
             ),
         ).alias("mean_diff_obs"),
         round_int_ratio(F.lit(1) + F.col("n_exceed"), F.lit(B + 1)).alias("p_value"),

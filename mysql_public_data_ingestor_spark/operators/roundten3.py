@@ -34,29 +34,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.exact import dec38, halfup_div, sql_halfup_div
 from ..registry import register
 from ..tables import Tables
-
-
-def _dec(c):
-    return c.cast("decimal(38,0)")
-
-
-def _halfup_div(num, den):
-    """Half-up integer division of decimal columns (den > 0), re-signed
-    like round_big_int_ratio but returning the INTEGER quotient as
-    decimal(38,0) (for further exact arithmetic, not display). Twin of
-    the ``CASE WHEN num < 0 THEN -((2*(-num)+den)//(2*den)) ...``
-    HUGEINT idiom in the oracles."""
-    a = F.lit(2).cast("decimal(38,0)") * _dec(F.abs(num)) + _dec(den)
-    b = F.lit(2).cast("decimal(38,0)") * _dec(den)
-    mag = (a - a % b) / b
-    return _dec(F.when(num < 0, -mag).otherwise(mag))
-
-
-def _sql_halfup_div(num: str, den: str) -> str:
-    mag = f"((2::HUGEINT*abs({num}) + ({den})) // (2::HUGEINT*({den})))"
-    return f"(CASE WHEN ({num}) < 0 THEN -{mag} ELSE {mag} END)"
 
 
 # ---------------------------------------------------------------------------
@@ -89,7 +69,7 @@ def _dw_oracle() -> str:
       FROM s
     ), resid AS (
       SELECT i.k,
-             i.y - {_sql_halfup_div(fit_num, 'co.d')} AS e
+             i.y - {sql_halfup_div(fit_num, 'co.d')} AS e
       FROM idx i, co
     ), dsum AS (
       SELECT CAST(sum((a.e - b.e) * (a.e - b.e)) AS HUGEINT) AS sd
@@ -140,16 +120,16 @@ def stats_durbin_watson_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = Tables(spark, sf_dir)
     cents = F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")
     daily = t.orders.groupBy(F.to_date("o_orderdate").alias("day")).agg(
-        _dec(F.sum(cents)).alias("y")
+        dec38(F.sum(cents)).alias("y")
     )
     b0 = daily.select(F.col("day").alias("day_b"))
     idx = (
         daily.join(F.broadcast(b0), F.col("day_b") <= F.col("day"))
         .groupBy("day", "y")
-        .agg(_dec(F.count(F.lit(1))).alias("k"))
+        .agg(dec38(F.count(F.lit(1))).alias("k"))
     )
     s = idx.agg(
-        _dec(F.count(F.lit(1))).alias("n"),
+        dec38(F.count(F.lit(1))).alias("n"),
         F.sum("k").alias("st"),
         F.sum(F.col("k") * F.col("k")).alias("stt"),
         F.sum("y").alias("sy"),
@@ -164,7 +144,7 @@ def stats_durbin_watson_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     fit_num = F.col("a") + F.col("b") * F.col("k")
     resid = idx.crossJoin(F.broadcast(co)).select(
         "k",
-        (F.col("y") - _halfup_div(fit_num, F.col("d"))).alias("e"),
+        (F.col("y") - halfup_div(fit_num, F.col("d"))).alias("e"),
     )
     ra = resid.select(F.col("k").alias("k_a"), F.col("e").alias("e_a"))
     rb = resid.select(F.col("k").alias("k_b"), F.col("e").alias("e_b"))
@@ -235,7 +215,7 @@ def _hurst_oracle() -> str:
       SELECT s, ls, 2 * lrs + ls - lv AS m FROM ls_rel
     ), per_size AS (
       SELECT s, ls, CAST(count(*) AS BIGINT) AS n_blocks,
-             {_sql_halfup_div('CAST(sum(m) AS HUGEINT)',
+             {sql_halfup_div('CAST(sum(m) AS HUGEINT)',
                               '2::HUGEINT * count(*)')} AS mq
       FROM per_block GROUP BY s, ls
     ), fit AS (
@@ -343,16 +323,16 @@ def stats_hurst_rs_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     per_size = per_block.groupBy("s", "ls").agg(
         F.count(F.lit(1)).alias("n_blocks"),
-        _halfup_div(
-            _dec(F.sum("m")), F.lit(2).cast("decimal(38,0)") * _dec(F.count(F.lit(1)))
+        halfup_div(
+            dec38(F.sum("m")), F.lit(2).cast("decimal(38,0)") * dec38(F.count(F.lit(1)))
         ).alias("mq"),
     )
     fit = per_size.agg(
-        _dec(F.count(F.lit(1))).alias("p"),
-        _dec(F.sum("ls")).alias("su"),
-        _dec(F.sum(F.col("ls") * F.col("ls"))).alias("suu"),
+        dec38(F.count(F.lit(1))).alias("p"),
+        dec38(F.sum("ls")).alias("su"),
+        dec38(F.sum(F.col("ls") * F.col("ls"))).alias("suu"),
         F.sum("mq").alias("sm"),
-        F.sum(_dec(F.col("ls")) * F.col("mq")).alias("sum_"),
+        F.sum(dec38(F.col("ls")) * F.col("mq")).alias("sum_"),
     )
     den = F.col("p") * F.col("suu") - F.col("su") * F.col("su")
     return per_size.crossJoin(F.broadcast(fit)).select(
@@ -495,8 +475,8 @@ def events_ccf_types_lags(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("n") * F.col("y") - F.col("sy")).alias("zy"),
     )
     den = cent.agg(
-        F.sum(_dec(F.col("zx")) * _dec(F.col("zx"))).alias("zxx"),
-        F.sum(_dec(F.col("zy")) * _dec(F.col("zy"))).alias("zyy"),
+        F.sum(dec38(F.col("zx")) * dec38(F.col("zx"))).alias("zxx"),
+        F.sum(dec38(F.col("zy")) * dec38(F.col("zy"))).alias("zyy"),
     )
     lags = F.explode(
         F.array(
@@ -512,7 +492,7 @@ def events_ccf_types_lags(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("l").alias("lag"))
         .agg(
             F.count(F.lit(1)).alias("n_pairs"),
-            F.sum(_dec(F.col("zx_a")) * _dec(F.col("zy_b"))).alias("num"),
+            F.sum(dec38(F.col("zx_a")) * dec38(F.col("zy_b"))).alias("num"),
         )
     )
     sign = F.when(F.col("num") < 0, F.lit(-1)).otherwise(F.lit(1)).cast(
@@ -1209,10 +1189,10 @@ def _chow_oracle() -> str:
       FROM sp, s1, s2, brk
     ), resid AS (
       SELECT i.k, c.kb, c.n, c.n1, c.n2,
-             i.y - {_sql_halfup_div('(c.a + c.b * i.k)', 'c.d')} AS ep,
+             i.y - {sql_halfup_div('(c.a + c.b * i.k)', 'c.d')} AS ep,
              i.y - CASE WHEN i.k <= c.kb
-                   THEN {_sql_halfup_div('(c.a1 + c.b1 * i.k)', 'c.d1')}
-                   ELSE {_sql_halfup_div('(c.a2 + c.b2 * i.k)', 'c.d2')} END AS eu
+                   THEN {sql_halfup_div('(c.a1 + c.b1 * i.k)', 'c.d1')}
+                   ELSE {sql_halfup_div('(c.a2 + c.b2 * i.k)', 'c.d2')} END AS eu
       FROM idx i, co c
       WHERE c.d > 0 AND c.d1 > 0 AND c.d2 > 0
     ), ssr AS (
@@ -1259,13 +1239,13 @@ def stats_chow_test_break(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = Tables(spark, sf_dir)
     cents = F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")
     daily = t.orders.groupBy(F.to_date("o_orderdate").alias("day")).agg(
-        _dec(F.sum(cents)).alias("y")
+        dec38(F.sum(cents)).alias("y")
     )
     b0 = daily.select(F.col("day").alias("day_b"))
     idx = (
         daily.join(F.broadcast(b0), F.col("day_b") <= F.col("day"))
         .groupBy("day", "y")
-        .agg(_dec(F.count(F.lit(1))).alias("k"))
+        .agg(dec38(F.count(F.lit(1))).alias("k"))
     )
     def sums(pred, sfx):
         flt = F.when(pred, F.lit(1)).otherwise(F.lit(0)).cast("decimal(38,0)")
@@ -1277,9 +1257,9 @@ def stats_chow_test_break(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(flt * F.col("k") * F.col("y")).alias(f"sty{sfx}"),
         ]
 
-    nn = idx.agg(_dec(F.count(F.lit(1))).alias("n_tot"))
+    nn = idx.agg(dec38(F.count(F.lit(1))).alias("n_tot"))
     kb_v = (F.col("n_tot") - F.col("n_tot") % 2) / 2
-    brk = nn.select(_dec(kb_v).alias("kb"))
+    brk = nn.select(dec38(kb_v).alias("kb"))
     withb = idx.crossJoin(F.broadcast(brk))
     stats = withb.agg(
         F.max("kb").alias("kb"),
@@ -1309,14 +1289,14 @@ def stats_chow_test_break(spark: SparkSession, sf_dir: str) -> DataFrame:
     j = idx.crossJoin(F.broadcast(cos)).filter(
         (F.col("d") > 0) & (F.col("d1") > 0) & (F.col("d2") > 0)
     )
-    ep = F.col("y") - _halfup_div(
+    ep = F.col("y") - halfup_div(
         F.col("a") + F.col("b") * F.col("k"), F.col("d")
     )
     eu = F.col("y") - F.when(
         F.col("k") <= F.col("kb"),
-        _halfup_div(F.col("a1") + F.col("b1") * F.col("k"), F.col("d1")),
+        halfup_div(F.col("a1") + F.col("b1") * F.col("k"), F.col("d1")),
     ).otherwise(
-        _halfup_div(F.col("a2") + F.col("b2") * F.col("k"), F.col("d2"))
+        halfup_div(F.col("a2") + F.col("b2") * F.col("k"), F.col("d2"))
     )
     ssr = j.select(
         "n", "nn1", "nn2", ep.alias("ep"), eu.alias("eu")
@@ -1532,11 +1512,11 @@ def events_decayed_value_halflife(spark: SparkSession, sf_dir: str) -> DataFrame
         F.count(F.lit(1)).alias("n_events"),
         F.sum("v").alias("raw_cents"),
         round_big_int_ratio(
-            F.sum(_dec(F.col("w")) * _dec(F.col("v"))), den_dec
+            F.sum(dec38(F.col("w")) * dec38(F.col("v"))), den_dec
         ).alias("decayed_cents"),
         round_big_int_ratio(
-            F.sum(_dec(F.col("w")) * _dec(F.col("v"))),
-            den_dec * _dec(F.sum("v")),
+            F.sum(dec38(F.col("w")) * dec38(F.col("v"))),
+            den_dec * dec38(F.sum("v")),
         ).alias("retention_ratio"),
     )
 
@@ -1568,7 +1548,7 @@ def _qi_entropy_oracle() -> str:
     {sql_det_ln_steps('ln_n_rel', 'arg_m', 'ln_m')}
     SELECT n AS n_rows, n_cells, min_c AS min_cell_size,
            {sql_round_int_ratio('max_c', 'n')} AS max_cell_share,
-           {_sql_halfup_div('(n * ln_n - clc)', 'n')} / 1000000.0
+           {sql_halfup_div('(n * ln_n - clc)', 'n')} / 1000000.0
              AS entropy_nats,
            ln_m / 1000000.0 AS ln_cells
     FROM ln_m_rel
@@ -1614,7 +1594,7 @@ def privacy_qi_entropy_risk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("min_c").alias("min_cell_size"),
         round_int_ratio(F.col("max_c"), F.col("n")).alias("max_cell_share"),
         (
-            _halfup_div(
+            halfup_div(
                 F.col("n") * det_ln_q(F.col("n")) - F.col("clc"), F.col("n")
             ).cast("long")
             / F.lit(1e6)
@@ -1688,11 +1668,11 @@ def dq_control_chart_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         "c",
         "n",
         "s",
-        (_dec(dev) * _dec(dev)).alias("dev2"),
+        (dec38(dev) * dec38(dev)).alias("dev2"),
         F.when(dev > 0, F.lit(1)).otherwise(F.lit(-1)).alias("side"),
     )
     viol = scored.filter(
-        F.col("dev2") > F.lit(9).cast("decimal(38,0)") * _dec(F.col("s")) * _dec(F.col("n"))
+        F.col("dev2") > F.lit(9).cast("decimal(38,0)") * dec38(F.col("s")) * dec38(F.col("n"))
     )
     nv = viol.agg(F.count(F.lit(1)).alias("n_violations"))
     return (
@@ -1707,7 +1687,7 @@ def dq_control_chart_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
             round_int_ratio(F.col("s"), F.col("n")).alias("mean_daily"),
             round_big_int_ratio(
                 F.col("dev2"),
-                F.lit(9).cast("decimal(38,0)") * _dec(F.col("s")) * _dec(F.col("n")),
+                F.lit(9).cast("decimal(38,0)") * dec38(F.col("s")) * dec38(F.col("n")),
             ).alias("z2_over_9"),
         )
     )
@@ -1795,16 +1775,16 @@ def stats_rayleigh_hour_uniformity(spark: SparkSession, sf_dir: str) -> DataFram
         F.sum("cc").alias("sc"),
         F.sum("cs").alias("ss"),
     )
-    num = _dec(F.col("sc")) * _dec(F.col("sc")) + _dec(F.col("ss")) * _dec(
+    num = dec38(F.col("sc")) * dec38(F.col("sc")) + dec38(F.col("ss")) * dec38(
         F.col("ss")
     )
     scale = F.lit(10**12).cast("decimal(38,0)")
     return vecs.select(
         "event_type",
         "n",
-        round_big_int_ratio(num, _dec(F.col("n")) * scale).alias("rayleigh_z"),
+        round_big_int_ratio(num, dec38(F.col("n")) * scale).alias("rayleigh_z"),
         round_big_int_ratio(
-            num, _dec(F.col("n")) * _dec(F.col("n")) * scale
+            num, dec38(F.col("n")) * dec38(F.col("n")) * scale
         ).alias("rbar_sq"),
     )
 
@@ -1878,11 +1858,11 @@ def events_its_segmented_regression(spark: SparkSession, sf_dir: str) -> DataFra
     idx = (
         daily.join(F.broadcast(b0), F.col("day_b") <= F.col("day"))
         .groupBy("day", "y")
-        .agg(_dec(F.count(F.lit(1))).alias("k"))
+        .agg(dec38(F.count(F.lit(1))).alias("k"))
     )
-    nn = idx.agg(_dec(F.count(F.lit(1))).alias("n_tot"))
+    nn = idx.agg(dec38(F.count(F.lit(1))).alias("n_tot"))
     brk = nn.select(
-        _dec((F.col("n_tot") - F.col("n_tot") % 2) / 2).alias("kb")
+        dec38((F.col("n_tot") - F.col("n_tot") % 2) / 2).alias("kb")
     )
 
     def sums(pred, sfx):
@@ -1891,8 +1871,8 @@ def events_its_segmented_regression(spark: SparkSession, sf_dir: str) -> DataFra
             F.sum(flt).alias(f"n{sfx}"),
             F.sum(flt * F.col("k")).alias(f"st{sfx}"),
             F.sum(flt * F.col("k") * F.col("k")).alias(f"stt{sfx}"),
-            F.sum(flt * _dec(F.col("y"))).alias(f"sy{sfx}"),
-            F.sum(flt * F.col("k") * _dec(F.col("y"))).alias(f"sty{sfx}"),
+            F.sum(flt * dec38(F.col("y"))).alias(f"sy{sfx}"),
+            F.sum(flt * F.col("k") * dec38(F.col("y"))).alias(f"sty{sfx}"),
         ]
 
     stats = idx.crossJoin(F.broadcast(brk)).agg(
@@ -2197,11 +2177,11 @@ def ml_spiegelhalter_z_calibration(spark: SparkSession, sf_dir: str) -> DataFram
     one_2q = F.lit(10000) - 2 * q
     terms = s.groupBy("lang").agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum(_dec((F.lit(10000) * F.col("label") - q)) * _dec(one_2q)).alias(
+        F.sum(dec38((F.lit(10000) * F.col("label") - q)) * dec38(one_2q)).alias(
             "num_s"
         ),
         F.sum(
-            _dec(one_2q) * _dec(one_2q) * _dec(q) * _dec(F.lit(10000) - q)
+            dec38(one_2q) * dec38(one_2q) * dec38(q) * dec38(F.lit(10000) - q)
         ).alias("var_s"),
     )
     sign = F.when(F.col("num_s") < 0, F.lit(-1)).otherwise(F.lit(1)).cast(
@@ -2417,7 +2397,7 @@ def _markov_entropy_oracle() -> str:
     ), witha AS (SELECT *, n_states AS arg_m FROM agg),
     {sql_det_ln_steps('witha', 'arg_m', 'lnm')}
     SELECT n_transitions, n_states, n_edges,
-           {_sql_halfup_div('hsum', 'n_transitions')} / 1000000.0
+           {sql_halfup_div('hsum', 'n_transitions')} / 1000000.0
              AS entropy_rate_nats,
            lnm / 1000000.0 AS ln_states
     FROM lnm_rel
@@ -2471,7 +2451,7 @@ def events_markov_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_states",
         "n_edges",
         (
-            _halfup_div(F.col("hsum"), F.col("n_transitions")).cast("long")
+            halfup_div(F.col("hsum"), F.col("n_transitions")).cast("long")
             / F.lit(1e6)
         ).alias("entropy_rate_nats"),
         (det_ln_q(F.col("n_states")) / F.lit(1e6)).alias("ln_states"),

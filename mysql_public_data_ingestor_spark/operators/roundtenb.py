@@ -1,13 +1,8 @@
-"""Round-9 banked operator queue, batch B — ACTIVATED in round 10.
+"""Round-10 operator batch (roundtenb).
 
-Round 9's driver window closed at 48/50 (the activated round-8 queue
-+ 25 direct registrations), so this batch was banked UNGATED at the
-end of round 9 (the round-9 snapshot wrongly claimed its gates
-existed — VERDICT r9 item 1). Round 10 made the claim true before
-flipping activation: raw-frame oracle parity + plan sweeps + Python
-replicas in ``tests/test_roundtenb.py``, fuzz profiles / sf0.1 / x10
-recorded in SCALE.md §5i, and ``registry._ensure_loaded`` now calls
-``roundtenb.activate()`` — all in the same commit as the gates.
+Gates: raw-frame oracle parity, plan sweeps and Python replicas in
+``tests/test_roundtenb.py``; fuzz profiles / sf0.1 / x10 in SCALE.md
+§5i.
 
 Batch theme: concordance effect size (Kendall's W over the Friedman
 rank table), product session-duration distribution, a code-detection
@@ -22,36 +17,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.exact import dec38
+from ..registry import register
 from ..tables import Tables
-
-QUEUE: list[tuple] = []
-
-
-def _queued(name: str, oracle: str):
-    def deco(fn):
-        QUEUE.append((name, fn, oracle, fn.__doc__ or ""))
-        return fn
-
-    return deco
-
-
-_ACTIVATED = False
-
-
-def activate() -> None:
-    """Register every queued query (round-10 switch; idempotent)."""
-    global _ACTIVATED
-    if _ACTIVATED:
-        return
-    from ..registry import register
-
-    for name, fn, oracle, doc in QUEUE:
-        register(name, oracle=oracle, doc=doc)(fn)
-    _ACTIVATED = True
-
-
-def _dec(c):
-    return c.cast("decimal(38,0)")
 
 
 # ---------------------------------------------------------------------------
@@ -101,7 +69,7 @@ def _kendall_w_oracle() -> str:
     """
 
 
-@_queued("stats_kendall_w_nation_priority", oracle=_kendall_w_oracle())
+@register("stats_kendall_w_nation_priority", oracle=_kendall_w_oracle())
 def stats_kendall_w_nation_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Kendall's coefficient of concordance W over the same
     nation-blocked priority rank table Friedman and Page use: W =
@@ -136,7 +104,7 @@ def stats_kendall_w_nation_priority(spark: SparkSession, sf_dir: str) -> DataFra
         .groupBy("blk", "trt")
         .agg(
             F.count(F.lit(1)).alias("n_cell"),
-            F.sum(_dec(F.col("cents"))).alias("s_cell"),
+            F.sum(dec38(F.col("cents"))).alias("s_cell"),
         )
     )
     kk = cells.agg(F.countDistinct("trt").alias("k"))
@@ -156,7 +124,7 @@ def stats_kendall_w_nation_priority(spark: SparkSession, sf_dir: str) -> DataFra
     rj = ranked.groupBy("trt").agg(F.sum("rnk").alias("r_j"))
     b = complete.agg(F.count(F.lit(1)).alias("b"))
     kb = kk.crossJoin(F.broadcast(b))
-    dev = F.lit(2).cast("decimal(38,0)") * F.col("r_j") - _dec(F.col("b")) * (
+    dev = F.lit(2).cast("decimal(38,0)") * F.col("r_j") - dec38(F.col("b")) * (
         F.col("k") + 1
     )
     s = rj.crossJoin(F.broadcast(kb)).agg(
@@ -165,7 +133,7 @@ def stats_kendall_w_nation_priority(spark: SparkSession, sf_dir: str) -> DataFra
         F.sum(dev * dev).alias("s4"),
     )
     den = (
-        _dec(F.col("b"))
+        dec38(F.col("b"))
         * F.col("b")
         * F.col("k")
         * (F.col("k") * F.col("k") - 1)
@@ -230,7 +198,7 @@ def _sessdur_oracle() -> str:
     """
 
 
-@_queued("events_session_duration_histogram", oracle=_sessdur_oracle())
+@register("events_session_duration_histogram", oracle=_sessdur_oracle())
 def events_session_duration_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session duration distribution over fixed minute buckets
     ([0,1), [1,5), [5,15), [15,30), [30,60), 60+): the engagement
@@ -308,7 +276,7 @@ def _code_detect_oracle() -> str:
     """
 
 
-@_queued("text_code_detection_gate", oracle=_code_detect_oracle())
+@register("text_code_detection_gate", oracle=_code_detect_oracle())
 def text_code_detection_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Code-detection heuristic per language: flag documents whose
     structural-symbol density ({{}};<>=) exceeds 5% of characters —
@@ -393,7 +361,7 @@ def _cost_threshold_oracle() -> str:
     )
 
 
-@_queued("ml_cost_optimal_threshold", oracle=_cost_threshold_oracle())
+@register("ml_cost_optimal_threshold", oracle=_cost_threshold_oracle())
 def ml_cost_optimal_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cost-sensitive operating point: the score threshold minimizing
     expected cost C_FP*FP + C_FN*FN (false negatives 5x false
@@ -478,7 +446,7 @@ def _ams_oracle() -> str:
     """
 
 
-@_queued("sketch_ams_f2_users", oracle=_ams_oracle())
+@register("sketch_ams_f2_users", oracle=_ams_oracle())
 def sketch_ams_f2_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """AMS (Alon-Matias-Szegedy) sketch of the second frequency
     moment F2 = sum_u count(u)^2 of per-user event counts — THE
@@ -584,7 +552,7 @@ def _weekday_anomaly_oracle() -> str:
     """
 
 
-@_queued("dq_weekday_volume_anomaly", oracle=_weekday_anomaly_oracle())
+@register("dq_weekday_volume_anomaly", oracle=_weekday_anomaly_oracle())
 def dq_weekday_volume_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weekday-adjusted order-volume anomaly monitor: a day is
     anomalous when its count deviates >= 3 sigma from ITS OWN
@@ -612,16 +580,16 @@ def dq_weekday_volume_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     per = wd.groupBy("weekday").agg(
         F.count(F.lit(1)).alias("n_w"),
-        F.sum(_dec(F.col("x"))).alias("s_w"),
-        F.sum(_dec(F.col("x")) * F.col("x")).alias("q_w"),
+        F.sum(dec38(F.col("x"))).alias("s_w"),
+        F.sum(dec38(F.col("x")) * F.col("x")).alias("q_w"),
     )
     j = wd.join(F.broadcast(per), "weekday")
-    dev = _dec(F.col("n_w")) * F.col("x") - F.col("s_w")
+    dev = dec38(F.col("n_w")) * F.col("x") - F.col("s_w")
     lhs = dev * dev * (F.col("n_w") - 1)
     rhs = (
         F.lit(ANOM_K_SIGMA * ANOM_K_SIGMA).cast("decimal(38,0)")
         * F.col("n_w")
-        * (_dec(F.col("n_w")) * F.col("q_w") - F.col("s_w") * F.col("s_w"))
+        * (dec38(F.col("n_w")) * F.col("q_w") - F.col("s_w") * F.col("s_w"))
     )
     flagged = j.select(
         "weekday",

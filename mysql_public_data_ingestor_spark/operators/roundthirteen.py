@@ -1,12 +1,8 @@
-"""Round-13 banked operator queue, batch P — built AND gated in round
-12 (same-commit rule: ``tests/test_roundthirteen.py`` carries
-raw-frame oracle parity, plan bars and Python replicas with float
-anchors; SCALE.md §5o records the ×10 ladder from this round's
-session).
+"""Round-13 operator batch P.
 
-NOT imported by ``registry._ensure_loaded`` yet — the round-12 window
-is exactly full at 50 unverified names (23 activated + 27 batch K-O).
-``activate()`` is the round-13 switch.
+Gates: raw-frame oracle parity, plan bars and Python replicas with
+float anchors in ``tests/test_roundthirteen.py``; SCALE.md §5o
+records the ×10 ladder.
 
 Batch theme — two-sample and randomness rank tests plus classical
 outlier/variance screens: Tukey's quick (pocket) test, the
@@ -26,34 +22,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.exact import dec38, halfup_div, sql_halfup_div
+from ..registry import register
 from ..tables import Tables
-from .roundeleven import _dec, _halfup_div, _sql_halfup_div
-
-QUEUE: list[tuple] = []
-
-
-def _queued(name: str, oracle: str):
-    def deco(fn):
-        QUEUE.append((name, fn, oracle, fn.__doc__ or ""))
-        return fn
-
-    return deco
-
-
-_ACTIVATED = False
-
-
-def activate() -> None:
-    """Register every queued query (round-13 switch; idempotent)."""
-    global _ACTIVATED
-    if _ACTIVATED:
-        return
-    from ..registry import register
-
-    for name, fn, oracle, doc in QUEUE:
-        register(name, oracle=oracle, doc=doc)(fn)
-    _ACTIVATED = True
-
 
 # ---------------------------------------------------------------------------
 # 1. Tukey quick (pocket) test: A vs R quantities
@@ -104,7 +75,7 @@ def _tukey_quick_oracle() -> str:
     """
 
 
-@_queued("stats_tukey_quick_ab", _tukey_quick_oracle())
+@register("stats_tukey_quick_ab", _tukey_quick_oracle())
 def stats_tukey_quick_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tukey's quick ("pocket") test (1959) on returned-vs-refused
     quantities: count one sample's values ABOVE the other's maximum
@@ -257,7 +228,7 @@ def _bm_oracle() -> str:
     """
 
 
-@_queued("stats_brunner_munzel_ab", _bm_oracle())
+@register("stats_brunner_munzel_ab", _bm_oracle())
 def stats_brunner_munzel_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brunner–Munzel heteroscedastic rank test (2000) on
     returned-vs-refused quantities: tests P(A < R) + P(A = R)/2 = 1/2
@@ -306,12 +277,12 @@ def stats_brunner_munzel_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
         "g",
         "v",
         "cnt_g",
-        _dec(2 * F.col("cum") + F.col("cnt") + 1).alias("rc2"),
-        _dec(2 * F.col("cum_g") + F.col("cnt_g") + 1).alias("rw2"),
+        dec38(2 * F.col("cum") + F.col("cnt") + 1).alias("rc2"),
+        dec38(2 * F.col("cum_g") + F.col("cnt_g") + 1).alias("rw2"),
     )
     gs = cell.groupBy("g").agg(
-        _dec(F.sum("cnt_g")).alias("n_g"),
-        F.sum(_dec(F.col("cnt_g")) * F.col("rc2")).alias("src2"),
+        dec38(F.sum("cnt_g")).alias("n_g"),
+        F.sum(dec38(F.col("cnt_g")) * F.col("rc2")).alias("src2"),
     )
     tv = cell.join(F.broadcast(gs), "g").select(
         "g",
@@ -323,7 +294,7 @@ def stats_brunner_munzel_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("t_scaled"),
     )
     sx = tv.groupBy("g").agg(
-        F.sum(_dec(F.col("cnt_g")) * F.col("t_scaled") * F.col("t_scaled")).alias(
+        F.sum(dec38(F.col("cnt_g")) * F.col("t_scaled") * F.col("t_scaled")).alias(
             "ssq"
         )
     )
@@ -349,7 +320,7 @@ def stats_brunner_munzel_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
         - F.col("nr") * (F.col("nr") + 1)
         - F.col("na") * F.col("nr")
     )
-    rel = _halfup_div(
+    rel = halfup_div(
         F.lit(1_000_000).cast("decimal(38,0)") * num,
         F.lit(2).cast("decimal(38,0)") * F.col("na") * F.col("nr"),
     )
@@ -403,7 +374,7 @@ def stats_brunner_munzel_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _bartels_oracle() -> str:
     from .roundeleven2 import _SQL_DAILY_COUNTS_IDX
 
-    hd = _sql_halfup_div
+    hd = sql_halfup_div
     return f"""
     WITH {_SQL_DAILY_COUNTS_IDX}
     , dvy AS (
@@ -447,7 +418,7 @@ def _bartels_oracle() -> str:
     """
 
 
-@_queued("stats_bartels_rank_daily", _bartels_oracle())
+@register("stats_bartels_rank_daily", _bartels_oracle())
 def stats_bartels_rank_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bartels rank von Neumann randomness test (1982) on the daily
     order counts: RVN = sum of squared successive RANK differences
@@ -481,10 +452,10 @@ def stats_bartels_rank_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         "y", "cnt", F.coalesce(F.sum("cnt").over(wv), F.lit(0)).alias("cum")
     )
     rk = idx.join(F.broadcast(ry), "y").select(
-        "k", _dec(2 * F.col("cum") + F.col("cnt") + 1).alias("r2")
+        "k", dec38(2 * F.col("cum") + F.col("cnt") + 1).alias("r2")
     )
     nn = rk.agg(
-        _dec(F.count(F.lit(1))).alias("n"), F.sum("r2").alias("sr2")
+        dec38(F.count(F.lit(1))).alias("n"), F.sum("r2").alias("sr2")
     )
     b = rk.select(F.col("k").alias("kb"), F.col("r2").alias("r2b"))
     num = (
@@ -527,7 +498,7 @@ def stats_bartels_rank_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n").cast("long").alias("n_days"),
             F.when(
                 F.col("dn") > 0,
-                _halfup_div(
+                halfup_div(
                     m6 * F.col("nm") * F.col("n") * F.col("n"), F.col("dn")
                 ).cast("long"),
             ).alias("rvn_micro"),
@@ -544,7 +515,7 @@ def stats_bartels_rank_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _dixon_oracle() -> str:
-    hd = _sql_halfup_div
+    hd = sql_halfup_div
     return """
     WITH daily AS (
       SELECT CAST(o_orderdate AS DATE) AS day, CAST(count(*) AS BIGINT) AS y
@@ -579,7 +550,7 @@ def _dixon_oracle() -> str:
     """
 
 
-@_queued("stats_dixon_q_daily", _dixon_oracle())
+@register("stats_dixon_q_daily", _dixon_oracle())
 def stats_dixon_q_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dixon's Q ratio (1950) at both extremes of the daily
     order-count distribution: Q_low = (x(2) - x(1)) / range and
@@ -633,7 +604,7 @@ def stats_dixon_q_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("xn1"),
     )
     m6 = F.lit(1_000_000).cast("decimal(38,0)")
-    rng = _dec(F.col("hi") - F.col("lo"))
+    rng = dec38(F.col("hi") - F.col("lo"))
     return j.select(
         F.col("n").alias("n_days"),
         F.col("lo").alias("min_daily"),
@@ -642,11 +613,11 @@ def stats_dixon_q_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("xn1").alias("second_highest"),
         F.when(
             F.col("hi") > F.col("lo"),
-            _halfup_div(m6 * _dec(F.col("x2") - F.col("lo")), rng).cast("long"),
+            halfup_div(m6 * dec38(F.col("x2") - F.col("lo")), rng).cast("long"),
         ).alias("q_low_micro"),
         F.when(
             F.col("hi") > F.col("lo"),
-            _halfup_div(m6 * _dec(F.col("hi") - F.col("xn1")), rng).cast("long"),
+            halfup_div(m6 * dec38(F.col("hi") - F.col("xn1")), rng).cast("long"),
         ).alias("q_high_micro"),
     )
 
@@ -657,7 +628,7 @@ def stats_dixon_q_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _fmax_oracle() -> str:
-    hd = _sql_halfup_div
+    hd = sql_halfup_div
     return """
     WITH q AS (
       SELECT l_returnflag AS g, CAST(l_quantity AS HUGEINT) AS v
@@ -709,7 +680,7 @@ def _fmax_oracle() -> str:
     """
 
 
-@_queued("stats_hartley_fmax_cochran_c", _fmax_oracle())
+@register("stats_hartley_fmax_cochran_c", _fmax_oracle())
 def stats_hartley_fmax_cochran_c(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hartley's Fmax (1950) and Cochran's C (1941) over the
     return-flag quantity groups: Fmax = s^2_max / s^2_min is the
@@ -736,10 +707,10 @@ def stats_hartley_fmax_cochran_c(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_returnflag").alias("g"), F.col("l_quantity").cast("long").alias("v")
     )
     gs = q.groupBy("g").agg(
-        _dec(F.count(F.lit(1))).alias("n_g"),
+        dec38(F.count(F.lit(1))).alias("n_g"),
         (
-            _dec(F.count(F.lit(1))) * F.sum(_dec(F.col("v")) * F.col("v"))
-            - _dec(F.sum("v")) * _dec(F.sum("v"))
+            dec38(F.count(F.lit(1))) * F.sum(dec38(F.col("v")) * F.col("v"))
+            - dec38(F.sum("v")) * dec38(F.sum("v"))
         ).alias("vnum"),
     )
     b = gs.select(
@@ -793,7 +764,7 @@ def stats_hartley_fmax_cochran_c(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("long").alias("n_groups"),
     )
     m6 = F.lit(1_000_000).cast("decimal(38,0)")
-    fmax = _halfup_div(
+    fmax = halfup_div(
         m6 * F.col("v_mx") * F.col("n_mn") * (F.col("n_mn") - 1),
         F.col("v_mn") * F.col("n_mx") * (F.col("n_mx") - 1),
     )

@@ -1,10 +1,7 @@
-"""Round-13 banked operator queue, batch Q — built AND gated in round
-12 (same-commit rule: ``tests/test_roundthirteen2.py``; SCALE.md §5o
-records the ×10 ladder).
+"""Round-13 operator batch Q.
 
-NOT imported by ``registry._ensure_loaded`` yet — the round-12 window
-is exactly full. ``activate()`` is the round-13 switch (flip together
-with ``roundthirteen.activate()``).
+Gates: ``tests/test_roundthirteen2.py``; SCALE.md §5o records the
+×10 ladder.
 
 Batch theme — changepoint scan, volatility-memory diagnostics and
 forecast-accuracy scaling on the daily series: the MOSUM moving-sum
@@ -23,35 +20,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.exact import dec38, halfup_div, sql_halfup_div
+from ..registry import register
 from ..tables import Tables
-from .roundeleven import _dec, _halfup_div, _sql_halfup_div
 from .roundeleven2 import _SQL_DAILY_COUNTS_IDX, _daily_counts_idx
-
-QUEUE: list[tuple] = []
-
-
-def _queued(name: str, oracle: str):
-    def deco(fn):
-        QUEUE.append((name, fn, oracle, fn.__doc__ or ""))
-        return fn
-
-    return deco
-
-
-_ACTIVATED = False
-
-
-def activate() -> None:
-    """Register every queued query (round-13 switch; idempotent)."""
-    global _ACTIVATED
-    if _ACTIVATED:
-        return
-    from ..registry import register
-
-    for name, fn, oracle, doc in QUEUE:
-        register(name, oracle=oracle, doc=doc)(fn)
-    _ACTIVATED = True
-
 
 # ---------------------------------------------------------------------------
 # 1. MOSUM moving-sum changepoint scan
@@ -61,7 +33,7 @@ MOSUM_H = 30  # bandwidth (days)
 
 
 def _mosum_oracle() -> str:
-    hd = _sql_halfup_div
+    hd = sql_halfup_div
     h = MOSUM_H
     return f"""
     WITH {_SQL_DAILY_COUNTS_IDX}
@@ -94,7 +66,7 @@ def _mosum_oracle() -> str:
     """
 
 
-@_queued("events_mosum_changepoint", _mosum_oracle())
+@register("events_mosum_changepoint", _mosum_oracle())
 def events_mosum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MOSUM (moving-sum) changepoint scan on the daily order counts
     (Bauer & Hackl 1978): slide a {MOSUM_H}-day window, compare each
@@ -118,7 +90,7 @@ def events_mosum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = Tables(spark, sf_dir)
     idx = _daily_counts_idx(t)
     tot = idx.agg(
-        _dec(F.count(F.lit(1))).alias("m"),
+        dec38(F.count(F.lit(1))).alias("m"),
         F.sum("y").alias("sy"),
         F.sum(F.col("y") * F.col("y")).alias("syy"),
     )
@@ -152,7 +124,7 @@ def events_mosum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("day").cast("timestamp").alias("window_start_day"),
         F.when(
             F.col("v") > 0,
-            _halfup_div(
+            halfup_div(
                 m6 * F.col("d") * F.col("d"),
                 F.lit(2 * MOSUM_H).cast("decimal(38,0)") * F.col("v"),
             ).cast("long"),
@@ -170,7 +142,7 @@ ML_LAGS = 7
 def _mcleod_oracle() -> str:
     from .roundeleven7 import _SQL_BP_RESID_CTES
 
-    hd = _sql_halfup_div
+    hd = sql_halfup_div
     return f"""
     WITH {_SQL_BP_RESID_CTES}, z AS (
       SELECT k, (u * u) AS z FROM resid
@@ -212,7 +184,7 @@ def _mcleod_oracle() -> str:
     """
 
 
-@_queued("stats_mcleod_li_daily", _mcleod_oracle())
+@register("stats_mcleod_li_daily", _mcleod_oracle())
 def stats_mcleod_li_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """McLeod–Li test (1983) on the daily order-count OLS residuals:
     the Ljung–Box portmanteau computed on the SQUARED residuals at
@@ -244,7 +216,7 @@ def stats_mcleod_li_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     # branches (c0, both sides of 7 lag joins, zt/q/nn) re-reads a
     # ~2.4k-row 2-column parquet scan — no checkpoint needed.
     z = _bp_resid(t).select("k", (F.col("u") * F.col("u")).alias("z"))
-    zt = z.agg(_dec(F.count(F.lit(1))).alias("n"), F.sum("z").alias("sz"))
+    zt = z.agg(dec38(F.count(F.lit(1))).alias("n"), F.sum("z").alias("sz"))
     zeta = z.crossJoin(F.broadcast(zt)).select(
         "k", (F.col("n") * F.col("z") - F.col("sz")).alias("c"), "n"
     )
@@ -273,9 +245,9 @@ def stats_mcleod_li_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         rr.crossJoin(F.broadcast(zt))
         .agg(
             F.sum(
-                _halfup_div(
-                    F.col("n") * (F.col("n") + 2) * _dec(F.col("r2u")),
-                    F.col("n") - _dec(F.col("lag")),
+                halfup_div(
+                    F.col("n") * (F.col("n") + 2) * dec38(F.col("r2u")),
+                    F.col("n") - dec38(F.col("lag")),
                 )
             ).alias("qstat")
         )
@@ -302,7 +274,7 @@ MASE_SEASON = 7
 
 
 def _mase_oracle() -> str:
-    hd = _sql_halfup_div
+    hd = sql_halfup_div
     s = MASE_SEASON
     return f"""
     WITH {_SQL_DAILY_COUNTS_IDX}
@@ -329,7 +301,7 @@ def _mase_oracle() -> str:
     """
 
 
-@_queued("events_mase_seasonal_naive", _mase_oracle())
+@register("events_mase_seasonal_naive", _mase_oracle())
 def events_mase_seasonal_naive(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MASE (mean absolute scaled error, Hyndman & Koehler 2006) of
     the seasonal-naive forecast on the daily order counts, scaled by
@@ -362,7 +334,7 @@ def events_mase_seasonal_naive(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     sums = ev.agg(
-        _dec(F.count(F.lit(1))).alias("n"),
+        dec38(F.count(F.lit(1))).alias("n"),
         F.sum("e1").alias("mae1_sum"),
         F.sum("e7").alias("mae7_sum"),
     )
@@ -373,7 +345,7 @@ def events_mase_seasonal_naive(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("mae7_sum").cast("long").alias("abs_err_seasonal_sum"),
         F.when(
             F.col("mae1_sum") > 0,
-            _halfup_div(m6 * F.col("mae7_sum"), F.col("mae1_sum")).cast("long"),
+            halfup_div(m6 * F.col("mae7_sum"), F.col("mae1_sum")).cast("long"),
         ).alias("mase_micro"),
     )
 
@@ -386,7 +358,7 @@ def events_mase_seasonal_naive(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _pois_dev_oracle() -> str:
     from ..functions.detmath import sql_det_ln_steps
 
-    hd = _sql_halfup_div
+    hd = sql_halfup_div
     return f"""
     WITH daily AS (
       SELECT CAST(o_orderdate AS DATE) AS day,
@@ -416,7 +388,7 @@ def _pois_dev_oracle() -> str:
     """
 
 
-@_queued("stats_poisson_deviance_dow", _pois_dev_oracle())
+@register("stats_poisson_deviance_dow", _pois_dev_oracle())
 def stats_poisson_deviance_dow(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Poisson deviance of the day-of-week rate model on daily order
     counts: D = 2 sum[y ln(y/mu) - (y - mu)] with mu = the weekday
@@ -460,7 +432,7 @@ def stats_poisson_deviance_dow(spark: SparkSession, sf_dir: str) -> DataFrame:
         / F.col("s_d").cast("double")
     )
     dev = cells.select(
-        (_dec(F.col("c")) * F.col("y") * lnr).alias("t")
+        (dec38(F.col("c")) * F.col("y") * lnr).alias("t")
     ).agg(F.sum("t").alias("half_dev_micro"))
     nn = daily.agg(F.count(F.lit(1)).cast("long").alias("n_days"))
     nd = dows.agg(F.count(F.lit(1)).cast("long").alias("n_dow"))
@@ -515,7 +487,7 @@ def _ssen_oracle() -> str:
     """
 
 
-@_queued("stats_seasonal_sen_slope", _ssen_oracle())
+@register("stats_seasonal_sen_slope", _ssen_oracle())
 def stats_seasonal_sen_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Seasonal Sen slope on the daily order counts: Theil–Sen's
     median-of-pairwise-slopes computed WITHIN each ISO weekday (so
@@ -551,8 +523,8 @@ def stats_seasonal_sen_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = idx.select(
         F.col("dow").alias("dow_b"), F.col("y").alias("y_b"), F.col("i").alias("i_b")
     )
-    num = _dec(F.col("y_b")) - _dec(F.col("y"))
-    den = _dec(F.col("i_b")) - _dec(F.col("i"))
+    num = dec38(F.col("y_b")) - dec38(F.col("y"))
+    den = dec38(F.col("i_b")) - dec38(F.col("i"))
     a_ = F.lit(20000).cast("decimal(38,0)") * F.abs(num) + den
     b_ = F.lit(2).cast("decimal(38,0)") * den
     mag = ((a_ - a_ % b_) / b_).cast("long")

@@ -1,10 +1,7 @@
-"""Round-13 banked operator queue, batch R — built AND gated in round
-12 (same-commit rule: ``tests/test_roundthirteen3.py``; SCALE.md §5o
-records the ×10 ladder).
+"""Round-13 operator batch R.
 
-NOT imported by ``registry._ensure_loaded`` yet — the round-12 window
-is exactly full. ``activate()`` is the round-13 switch (flip together
-with ``roundthirteen.activate()`` / ``roundthirteen2.activate()``).
+Gates: ``tests/test_roundthirteen3.py``; SCALE.md §5o records the
+×10 ladder.
 
 Batch theme — corpus richness, calibration, threshold selection,
 dedup policy and presence risk: Honoré's R lexical richness, adaptive
@@ -22,34 +19,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.exact import dec38, halfup_div, sql_halfup_div
+from ..registry import register
 from ..tables import Tables
-from .roundeleven import _dec, _halfup_div, _sql_halfup_div
-
-QUEUE: list[tuple] = []
-
-
-def _queued(name: str, oracle: str):
-    def deco(fn):
-        QUEUE.append((name, fn, oracle, fn.__doc__ or ""))
-        return fn
-
-    return deco
-
-
-_ACTIVATED = False
-
-
-def activate() -> None:
-    """Register every queued query (round-13 switch; idempotent)."""
-    global _ACTIVATED
-    if _ACTIVATED:
-        return
-    from ..registry import register
-
-    for name, fn, oracle, doc in QUEUE:
-        register(name, oracle=oracle, doc=doc)(fn)
-    _ACTIVATED = True
-
 
 # ---------------------------------------------------------------------------
 # 1. Honoré's R lexical richness per language
@@ -59,7 +31,7 @@ def activate() -> None:
 def _honore_oracle() -> str:
     from ..functions.detmath import sql_det_ln_steps
 
-    hd = _sql_halfup_div
+    hd = sql_halfup_div
     return f"""
     WITH toks AS (
       SELECT lang,
@@ -84,7 +56,7 @@ def _honore_oracle() -> str:
     """
 
 
-@_queued("text_honore_r_by_lang", _honore_oracle())
+@register("text_honore_r_by_lang", _honore_oracle())
 def text_honore_r_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Honoré's R lexical richness per language (1979): R = 100 ln N /
     (1 - V1/V) — the hapax-based richness statistic that grows with
@@ -124,7 +96,7 @@ def text_honore_r_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
         "hapax",
         F.when(
             F.col("vocab") > F.col("hapax"),
-            _halfup_div(
+            halfup_div(
                 F.lit(100).cast("decimal(38,0)") * lnn * F.col("vocab"),
                 F.lit(1000).cast("decimal(38,0)") * (F.col("vocab") - F.col("hapax")),
             ).cast("long"),
@@ -142,7 +114,7 @@ ACE_BINS = 10
 def _ace_oracle() -> str:
     from .ml import _scored_labeled_sql
 
-    hd = _sql_halfup_div
+    hd = sql_halfup_div
     k = ACE_BINS
     return (
         _scored_labeled_sql()
@@ -184,7 +156,7 @@ def _ace_oracle() -> str:
     )
 
 
-@_queued("ml_adaptive_calibration_error", _ace_oracle())
+@register("ml_adaptive_calibration_error", _ace_oracle())
 def ml_adaptive_calibration_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Adaptive (equal-mass) calibration error over {ACE_BINS}
     quantile bins of the classifier score: per bin |mean score -
@@ -236,7 +208,7 @@ def ml_adaptive_calibration_error(spark: SparkSession, sf_dir: str) -> DataFrame
         F.count(F.lit(1)).cast("long").alias("n_values"),
         F.sum("n").cast("long").alias("n_b"),
         F.sum("pos").cast("long").alias("pos_b"),
-        F.sum(_dec(F.col("score_q")) * F.col("n")).alias("s_b"),
+        F.sum(dec38(F.col("score_q")) * F.col("n")).alias("s_b"),
     )
     gaps = bins.select(
         "bin",
@@ -245,16 +217,16 @@ def ml_adaptive_calibration_error(spark: SparkSession, sf_dir: str) -> DataFrame
         (F.lit(100).cast("decimal(38,0)") * F.col("s_b")).cast("long").alias(
             "exp_pos_micro"
         ),
-        _halfup_div(
+        halfup_div(
             F.lit(100).cast("decimal(38,0)")
-            * F.abs(F.col("s_b") - _dec(10000 * F.col("pos_b"))),
-            _dec(F.col("n_b")),
+            * F.abs(F.col("s_b") - dec38(10000 * F.col("pos_b"))),
+            dec38(F.col("n_b")),
         )
         .cast("long")
         .alias("gap_micro"),
     )
     tot = gaps.agg(
-        _halfup_div(_dec(F.sum("gap_micro")), _dec(F.count(F.lit(1))))
+        halfup_div(dec38(F.sum("gap_micro")), dec38(F.count(F.lit(1))))
         .cast("long")
         .alias("ace")
     )
@@ -276,7 +248,7 @@ FBETA_SQ = ((1, 4), (1, 1), (4, 1))  # beta^2 as (num, den): 0.25, 1, 4
 def _fbeta_oracle() -> str:
     from .ml import _scored_labeled_sql
 
-    hd = _sql_halfup_div
+    hd = sql_halfup_div
     betas = ", ".join(f"({n}, {d})" for n, d in FBETA_SQ)
     return (
         _scored_labeled_sql()
@@ -323,7 +295,7 @@ def _fbeta_oracle() -> str:
     )
 
 
-@_queued("ml_fbeta_optimal_thresholds", _fbeta_oracle())
+@register("ml_fbeta_optimal_thresholds", _fbeta_oracle())
 def ml_fbeta_optimal_thresholds(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F-beta-optimal decision thresholds over the classifier score
     grid for beta^2 in (1/4, 1, 4) — precision-weighted (F0.5),
@@ -384,11 +356,11 @@ def ml_fbeta_optimal_thresholds(spark: SparkSession, sf_dir: str) -> DataFrame:
             "tp",
             (F.col("n_sel") - F.col("tp")).alias("fp"),
             (F.col("p") - F.col("tp")).alias("fn"),
-            _halfup_div(
+            halfup_div(
                 F.lit(1_000_000).cast("decimal(38,0)")
                 * (F.col("bd") + F.col("bn"))
                 * F.col("tp"),
-                _dec(den),
+                dec38(den),
             )
             .cast("long")
             .alias("f_micro"),
@@ -440,7 +412,7 @@ def _jt_oracle() -> str:
     """
 
 
-@_queued("dedup_pair_jaccard_threshold_curve", _jt_oracle())
+@register("dedup_pair_jaccard_threshold_curve", _jt_oracle())
 def dedup_pair_jaccard_threshold_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dedup POLICY curve over the shared blocked ngram-Jaccard pair
     set (``dedup.dedup_ngram_jaccard`` — one derivation, two
@@ -497,7 +469,7 @@ DP_SAMPLE_MOD = 4  # hash-25% published sample
 
 
 def _delta_presence_oracle() -> str:
-    hd = _sql_halfup_div
+    hd = sql_halfup_div
     return f"""
     WITH pop AS (
       SELECT c_custkey, c_nationkey AS nat,
@@ -530,7 +502,7 @@ def _delta_presence_oracle() -> str:
     """
 
 
-@_queued("privacy_delta_presence_audit", _delta_presence_oracle())
+@register("privacy_delta_presence_audit", _delta_presence_oracle())
 def privacy_delta_presence_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Delta-presence disclosure audit (Nergiz & Clifton 2007): with a
     deterministic hash-25% "published" subset of customers, compute
@@ -579,7 +551,7 @@ def privacy_delta_presence_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("n_pop").cast("long").alias("n_pop"),
         F.sum("n_pub").cast("long").alias("n_pub"),
         F.max(
-            _halfup_div(m6 * _dec(F.col("n_pub")), _dec(F.col("n_pop"))).cast("long")
+            halfup_div(m6 * dec38(F.col("n_pub")), dec38(F.col("n_pop"))).cast("long")
         ).alias("max_presence_micro"),
         F.sum(F.when(2 * F.col("n_pub") > F.col("n_pop"), 1).otherwise(0))
         .cast("long")
@@ -597,7 +569,7 @@ def privacy_delta_presence_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "max_presence_micro",
         "n_risky_cells",
         "n_risky_published",
-        _halfup_div(m6 * _dec(F.col("n_pub")), _dec(F.col("n_pop")))
+        halfup_div(m6 * dec38(F.col("n_pub")), dec38(F.col("n_pop")))
         .cast("long")
         .alias("mean_presence_micro"),
     )

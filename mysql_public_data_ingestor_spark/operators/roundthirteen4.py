@@ -1,9 +1,7 @@
-"""Round-13 banked operator queue, batch S — built AND gated in round
-12 (same-commit rule: ``tests/test_roundthirteen4.py``; SCALE.md §5o
-records the ×10 ladder).
+"""Round-13 operator batch S.
 
-NOT imported by ``registry._ensure_loaded`` yet. ``activate()`` is
-the round-13 switch (flip with the other roundthirteen modules).
+Gates: ``tests/test_roundthirteen4.py``; SCALE.md §5o records the
+×10 ladder.
 
 Batch theme — coverage, deployment arithmetic and budget
 concentration: which parts the co-purchase graph can see at all, how
@@ -21,34 +19,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.exact import dec38, halfup_div, sql_halfup_div
+from ..registry import register
 from ..tables import Tables
-from .roundeleven import _dec, _halfup_div, _sql_halfup_div
-
-QUEUE: list[tuple] = []
-
-
-def _queued(name: str, oracle: str):
-    def deco(fn):
-        QUEUE.append((name, fn, oracle, fn.__doc__ or ""))
-        return fn
-
-    return deco
-
-
-_ACTIVATED = False
-
-
-def activate() -> None:
-    """Register every queued query (round-13 switch; idempotent)."""
-    global _ACTIVATED
-    if _ACTIVATED:
-        return
-    from ..registry import register
-
-    for name, fn, oracle, doc in QUEUE:
-        register(name, oracle=oracle, doc=doc)(fn)
-    _ACTIVATED = True
-
 
 # ---------------------------------------------------------------------------
 # 1. Co-purchase graph coverage audit
@@ -58,7 +31,7 @@ def activate() -> None:
 def _coverage_oracle() -> str:
     from .graph import _SQL_EDGES
 
-    hd = _sql_halfup_div
+    hd = sql_halfup_div
     return _SQL_EDGES + f"""
     , nodes AS (
       SELECT DISTINCT node FROM (
@@ -80,7 +53,7 @@ def _coverage_oracle() -> str:
     """
 
 
-@_queued("graph_copurchase_coverage_audit", _coverage_oracle())
+@register("graph_copurchase_coverage_audit", _coverage_oracle())
 def graph_copurchase_coverage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Coverage audit of the co-purchase graph against the part
     dimension: how many parts exist, how many were ever sold, how
@@ -123,10 +96,10 @@ def graph_copurchase_coverage_audit(spark: SparkSession, sf_dir: str) -> DataFra
             "n_in_graph",
             (F.col("n_parts") - F.col("n_sold")).alias("n_never_sold"),
             (F.col("n_sold") - F.col("n_in_graph")).alias("n_sold_isolated"),
-            _halfup_div(m6 * _dec(F.col("n_in_graph")), _dec(F.col("n_parts")))
+            halfup_div(m6 * dec38(F.col("n_in_graph")), dec38(F.col("n_parts")))
             .cast("long")
             .alias("graph_coverage_micro"),
-            _halfup_div(m6 * _dec(F.col("n_in_graph")), _dec(F.col("n_sold")))
+            halfup_div(m6 * dec38(F.col("n_in_graph")), dec38(F.col("n_sold")))
             .cast("long")
             .alias("sold_coverage_micro"),
         )
@@ -144,7 +117,7 @@ PPV_PREVALENCE_MILLI = (10, 50, 100, 250, 500)
 def _ppv_oracle() -> str:
     from .ml import _scored_labeled_sql
 
-    hd = _sql_halfup_div
+    hd = sql_halfup_div
     th = PPV_THRESHOLD
     ps = ", ".join(str(x) for x in PPV_PREVALENCE_MILLI)
     return (
@@ -184,7 +157,7 @@ def _ppv_oracle() -> str:
     )
 
 
-@_queued("ml_ppv_prevalence_grid", _ppv_oracle())
+@register("ml_ppv_prevalence_grid", _ppv_oracle())
 def ml_ppv_prevalence_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PPV/NPV of the classifier's fixed 0.5 operating point under a
     PREVALENCE grid (1%, 5%, 10%, 25%, 50%): Bayes-adjust the
@@ -230,21 +203,21 @@ def ml_ppv_prevalence_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("pi_milli")
     )
     m6 = F.lit(1_000_000).cast("decimal(38,0)")
-    a = _dec(F.col("pi_milli")) * F.col("tp") * (F.col("tn") + F.col("fp"))
-    b = _dec(1000 - F.col("pi_milli")) * F.col("fp") * (F.col("tp") + F.col("fn"))
-    cnpv = _dec(1000 - F.col("pi_milli")) * F.col("tn") * (
+    a = dec38(F.col("pi_milli")) * F.col("tp") * (F.col("tn") + F.col("fp"))
+    b = dec38(1000 - F.col("pi_milli")) * F.col("fp") * (F.col("tp") + F.col("fn"))
+    cnpv = dec38(1000 - F.col("pi_milli")) * F.col("tn") * (
         F.col("tp") + F.col("fn")
     )
-    dnpv = _dec(F.col("pi_milli")) * F.col("fn") * (F.col("tn") + F.col("fp"))
+    dnpv = dec38(F.col("pi_milli")) * F.col("fn") * (F.col("tn") + F.col("fp"))
     return (
         pis.crossJoin(F.broadcast(conf))
         .select(
             F.col("pi_milli").alias("prevalence_milli"),
-            F.when(a + b > 0, _halfup_div(m6 * a, a + b).cast("long")).alias(
+            F.when(a + b > 0, halfup_div(m6 * a, a + b).cast("long")).alias(
                 "ppv_micro"
             ),
             F.when(
-                cnpv + dnpv > 0, _halfup_div(m6 * cnpv, cnpv + dnpv).cast("long")
+                cnpv + dnpv > 0, halfup_div(m6 * cnpv, cnpv + dnpv).cast("long")
             ).alias("npv_micro"),
         )
         .orderBy("prevalence_milli")
@@ -259,7 +232,7 @@ TML_DECILES = 10
 
 
 def _tml_oracle() -> str:
-    hd = _sql_halfup_div
+    hd = sql_halfup_div
     k = TML_DECILES
     return f"""
     WITH dl AS (
@@ -298,7 +271,7 @@ def _tml_oracle() -> str:
     """
 
 
-@_queued("corpus_token_mass_lorenz", _tml_oracle())
+@register("corpus_token_mass_lorenz", _tml_oracle())
 def corpus_token_mass_lorenz(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lorenz curve of corpus character mass across document-length
     deciles: sort documents by length, cut into {TML_DECILES}
@@ -328,7 +301,7 @@ def corpus_token_mass_lorenz(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = Tables(spark, sf_dir)
     dl = t.documents.groupBy("n_chars").agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
-        (_dec(F.col("n_chars")) * F.count(F.lit(1))).alias("mass"),
+        (dec38(F.col("n_chars")) * F.count(F.lit(1))).alias("mass"),
     )
     nn = dl.agg(
         F.sum("n_docs").cast("long").alias("total_docs"),
@@ -361,10 +334,10 @@ def corpus_token_mass_lorenz(spark: SparkSession, sf_dir: str) -> DataFrame:
         "decile",
         "n_docs",
         F.col("mass").cast("long").alias("char_mass"),
-        _halfup_div(m6 * F.col("mass"), F.col("total_mass"))
+        halfup_div(m6 * F.col("mass"), F.col("total_mass"))
         .cast("long")
         .alias("mass_share_micro"),
-        _halfup_div(m6 * F.sum("mass").over(wc), F.col("total_mass"))
+        halfup_div(m6 * F.sum("mass").over(wc), F.col("total_mass"))
         .cast("long")
         .alias("cum_mass_share_micro"),
     ).orderBy("decile")

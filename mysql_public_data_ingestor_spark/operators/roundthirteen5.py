@@ -31,9 +31,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.exact import dec38, halfup_div, sql_halfup_div
 from ..registry import register
 from ..tables import Tables
-from .roundeleven import _dec, _halfup_div, _sql_halfup_div
 
 # ---------------------------------------------------------------------------
 # 1. Barrat weighted local clustering for the top co-purchase hubs
@@ -46,7 +46,7 @@ def _barrat_oracle() -> str:
     from .graph import _SQL_TRI_CTES
     from .roundtwelve8 import _SQL_WEDGES
 
-    hd = _sql_halfup_div
+    hd = sql_halfup_div
     return _SQL_TRI_CTES + f"""
     , {_SQL_WEDGES.strip().rstrip()}
     , tw AS (
@@ -104,8 +104,7 @@ def graph_weighted_clustering_barrat(spark: SparkSession, sf_dir: str) -> DataFr
     ``graph.triangle_table`` (one enumeration for the whole closure
     family); weights come from ``roundtwelve8._wedges`` — the SAME
     derivation ``graph_weighted_triangles`` consumes, extracted (not
-    rewritten) this round with the consumer re-entered in
-    ``_EVIDENCE_MIN_ROUND`` per the shared-derivation rule.
+    rewritten) in round 13.
 
     Exactness: corner weight sums, strengths and degrees are exact
     integers; the /2 of the Barrat pair-average folds into the
@@ -166,13 +165,13 @@ def graph_weighted_clustering_barrat(spark: SparkSession, sf_dir: str) -> DataFr
     )
     csum = corners.groupBy("node").agg(
         F.count(F.lit(1)).cast("long").alias("n_tri"),
-        F.sum(_dec(F.col("wp"))).alias("wsum"),
+        F.sum(dec38(F.col("wp"))).alias("wsum"),
     )
     strength = (
         wedges.select(F.col("u").alias("node"), "w")
         .unionAll(wedges.select(F.col("v").alias("node"), "w"))
         .groupBy("node")
-        .agg(F.sum(_dec(F.col("w"))).alias("s"))
+        .agg(F.sum(dec38(F.col("w"))).alias("s"))
     )
     deg = _degrees(edge_table(spark, t, sf_dir))
     m6 = F.lit(1_000_000).cast("decimal(38,0)")
@@ -187,19 +186,19 @@ def graph_weighted_clustering_barrat(spark: SparkSession, sf_dir: str) -> DataFr
             F.coalesce(F.col("n_tri"), F.lit(0).cast("long")).alias("n_tri"),
             F.when(
                 F.col("n_tri").isNotNull(),
-                _halfup_div(
+                halfup_div(
                     m6 * F.col("wsum"),
                     F.lit(2).cast("decimal(38,0)")
                     * F.col("s")
-                    * _dec(F.col("degree") - 1),
+                    * dec38(F.col("degree") - 1),
                 ).cast("long"),
             )
             .otherwise(F.lit(0).cast("long"))
             .alias("barrat_micro"),
-            _halfup_div(
+            halfup_div(
                 m6 * F.lit(2).cast("decimal(38,0)")
-                * _dec(F.coalesce(F.col("n_tri"), F.lit(0).cast("long"))),
-                _dec(F.col("degree")) * _dec(F.col("degree") - 1),
+                * dec38(F.coalesce(F.col("n_tri"), F.lit(0).cast("long"))),
+                dec38(F.col("degree")) * dec38(F.col("degree") - 1),
             )
             .cast("long")
             .alias("clustering_micro"),
@@ -220,7 +219,7 @@ EC_TOPK = 10
 def _ec_oracle() -> str:
     from .graph import _SQL_EDGES
 
-    hd = _sql_halfup_div
+    hd = sql_halfup_div
     parts = [
         _SQL_EDGES,
         """
@@ -245,7 +244,7 @@ def _ec_oracle() -> str:
     )""".format(
                 i=i,
                 prev=prev,
-                upd=_sql_halfup_div(f"{EC_SCALE}::HUGEINT * s.y", "m.my"),
+                upd=sql_halfup_div(f"{EC_SCALE}::HUGEINT * s.y", "m.my"),
             )
         )
         prev = f"e{i}"
@@ -322,7 +321,7 @@ def graph_eigenvector_centrality_power(spark: SparkSession, sf_dir: str) -> Data
             s.crossJoin(F.broadcast(mx))
             .select(
                 "node",
-                _halfup_div(m6 * _dec(F.col("y")), _dec(F.col("my")))
+                halfup_div(m6 * dec38(F.col("y")), dec38(F.col("my")))
                 .cast("long")
                 .alias("x"),
             )
@@ -345,7 +344,7 @@ def _brier_pav_oracle() -> str:
     from .roundten3 import ISO_BINS, _sql_iso_fit_ctes
 
     width = 10000 // ISO_BINS
-    hd = _sql_halfup_div
+    hd = sql_halfup_div
     return (
         _scored_labeled_sql()
         + ", "
@@ -448,7 +447,7 @@ def ml_brier_pav_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exchange, which Spark's ReuseExchange collapses to a single
     # execution of the expensive sha2 scoring scan (measured 2.7 s ->
     # ~1 s at sf0.1 vs three independent aggregates).
-    err = _dec(F.col("score_q") - F.lit(10000) * F.col("label"))
+    err = dec38(F.col("score_q") - F.lit(10000) * F.col("label"))
     stats = scored.groupBy(
         F.least(F.floor(F.col("score_q") / F.lit(width)), F.lit(ISO_BINS - 1))
         .cast("long")
@@ -456,7 +455,7 @@ def ml_brier_pav_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).agg(
         F.count(F.lit(1)).alias("n"),
         F.sum("label").alias("pos"),
-        F.sum(_dec(F.col("score_q"))).alias("ssum"),
+        F.sum(dec38(F.col("score_q"))).alias("ssum"),
         F.sum(err * err).alias("sqe"),
     )
     # the fit's prefix-sum minimax chain references the bin grid ~9
@@ -471,23 +470,23 @@ def ml_brier_pav_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
         fit.join(stats.select("bin", "ssum"), "bin")
         .groupBy("v")
         .agg(
-            F.sum(_dec(F.col("n"))).alias("n_b"),
-            F.sum(_dec(F.col("pos"))).alias("pos_b"),
+            F.sum(dec38(F.col("n"))).alias("n_b"),
+            F.sum(dec38(F.col("pos"))).alias("pos_b"),
             F.sum(F.col("ssum")).alias("ssum_b"),
         )
     )
     tot = stats.agg(
-        F.sum(_dec(F.col("n"))).alias("n"),
-        F.sum(_dec(F.col("pos"))).alias("p"),
+        F.sum(dec38(F.col("n"))).alias("n"),
+        F.sum(dec38(F.col("pos"))).alias("p"),
         F.sum("sqe").alias("sqe"),
     )
     m6 = F.lit(1_000_000).cast("decimal(38,0)")
     bterm = blocks.crossJoin(F.broadcast(tot)).select(
         "n_b",
-        _halfup_div(m6 * F.col("pos_b"), F.col("n_b")).alias("obar_b"),
-        _halfup_div(F.lit(100).cast("decimal(38,0)") * F.col("ssum_b"), F.col("n_b"))
+        halfup_div(m6 * F.col("pos_b"), F.col("n_b")).alias("obar_b"),
+        halfup_div(F.lit(100).cast("decimal(38,0)") * F.col("ssum_b"), F.col("n_b"))
         .alias("sbar_b"),
-        _halfup_div(m6 * F.col("p"), F.col("n")).alias("obar"),
+        halfup_div(m6 * F.col("p"), F.col("n")).alias("obar"),
     )
     comps = bterm.agg(
         F.count(F.lit(1)).cast("long").alias("n_blocks"),
@@ -504,10 +503,10 @@ def ml_brier_pav_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     m8 = F.lit(100_000_000).cast("decimal(38,0)")
     j = tot.crossJoin(F.broadcast(comps))
-    brier = _halfup_div(m6 * F.col("sqe"), m8 * F.col("n"))
-    rel = _halfup_div(F.col("rel_n"), m6 * F.col("n"))
-    res = _halfup_div(F.col("res_n"), m6 * F.col("n"))
-    unc = _halfup_div(m6 * F.col("p") * (F.col("n") - F.col("p")),
+    brier = halfup_div(m6 * F.col("sqe"), m8 * F.col("n"))
+    rel = halfup_div(F.col("rel_n"), m6 * F.col("n"))
+    res = halfup_div(F.col("res_n"), m6 * F.col("n"))
+    unc = halfup_div(m6 * F.col("p") * (F.col("n") - F.col("p")),
                       F.col("n") * F.col("n"))
     return j.select(
         F.col("n").cast("long").alias("n"),
@@ -529,7 +528,7 @@ def ml_brier_pav_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _stl_strength_oracle() -> str:
     from .roundeleven6 import _SQL_STL_DET_CTES
 
-    hd = _sql_halfup_div
+    hd = sql_halfup_div
     return f"""
     WITH {_SQL_STL_DET_CTES}
     , j AS (
@@ -600,14 +599,14 @@ def events_stl_trend_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
     # aggregate, not a derivation chain — the shared chain starts at
     # the detrend, which _stl_rem provides)
     daily = t.orders.groupBy(F.to_date("o_orderdate").alias("day")).agg(
-        _dec(F.count(F.lit(1))).alias("y")
+        dec38(F.count(F.lit(1))).alias("y")
     )
     m6 = F.lit(1_000_000).cast("decimal(38,0)")
     j = rem.join(daily, "day").select(
         (m6 * F.col("y") - F.col("d") + F.col("r")).alias("q"), "d", "r"
     )
     v = j.agg(
-        _dec(F.count(F.lit(1))).alias("m"),
+        dec38(F.count(F.lit(1))).alias("m"),
         F.sum("q").alias("sq"),
         F.sum(F.col("q") * F.col("q")).alias("sqq"),
         F.sum("d").alias("sd"),
@@ -621,10 +620,10 @@ def events_stl_trend_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
     vr = F.col("m") * F.col("srr") - F.col("sr") * F.col("sr")
     return v.select(
         F.col("m").cast("long").alias("n_days"),
-        F.when(vt > 0, F.greatest(zero, _halfup_div(m6 * (vt - vr), vt)))
+        F.when(vt > 0, F.greatest(zero, halfup_div(m6 * (vt - vr), vt)))
         .cast("long")
         .alias("trend_strength_micro"),
-        F.when(vd > 0, F.greatest(zero, _halfup_div(m6 * (vd - vr), vd)))
+        F.when(vd > 0, F.greatest(zero, halfup_div(m6 * (vd - vr), vd)))
         .cast("long")
         .alias("seasonal_strength_micro"),
     )
@@ -636,7 +635,7 @@ def events_stl_trend_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _kuiper_oracle() -> str:
-    hd = _sql_halfup_div
+    hd = sql_halfup_div
     return f"""
     WITH gv AS (
       SELECT CAST(l_quantity AS BIGINT) AS v,
@@ -706,7 +705,7 @@ def stats_kuiper_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.when(F.col("l_returnflag") == "R", 1).otherwise(0).alias("ir"),
         )
         .groupBy("v")
-        .agg(F.sum(_dec(F.col("ia"))).alias("na"), F.sum(_dec(F.col("ir"))).alias("nr"))
+        .agg(F.sum(dec38(F.col("ia"))).alias("na"), F.sum(dec38(F.col("ir"))).alias("nr"))
     )
     b = gv.select(
         F.col("v").alias("v_b"), F.col("na").alias("na_b"), F.col("nr").alias("nr_b")
@@ -731,9 +730,9 @@ def stats_kuiper_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dd.select(
         F.col("n_a").cast("long").alias("n_a"),
         F.col("n_r").cast("long").alias("n_r"),
-        _halfup_div(m6 * F.col("dp"), den).cast("long").alias("d_plus_micro"),
-        _halfup_div(m6 * F.col("dm"), den).cast("long").alias("d_minus_micro"),
-        _halfup_div(m6 * (F.col("dp") + F.col("dm")), den)
+        halfup_div(m6 * F.col("dp"), den).cast("long").alias("d_plus_micro"),
+        halfup_div(m6 * F.col("dm"), den).cast("long").alias("d_minus_micro"),
+        halfup_div(m6 * (F.col("dp") + F.col("dm")), den)
         .cast("long")
         .alias("kuiper_v_micro"),
     )

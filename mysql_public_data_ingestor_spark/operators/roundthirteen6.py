@@ -29,9 +29,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.exact import dec38, halfup_div, sql_halfup_div
 from ..registry import register
 from ..tables import Tables
-from .roundeleven import _dec, _halfup_div, _sql_halfup_div
 
 # ---------------------------------------------------------------------------
 # shared: priority x status contingency grid (two consumers below)
@@ -57,7 +57,7 @@ def _ps_grid(t: Tables) -> DataFrame:
         t.orders.groupBy(
             F.col("o_orderpriority").alias("x"), F.col("o_orderstatus").alias("y")
         )
-        .agg(_dec(F.count(F.lit(1))).alias("n"))
+        .agg(dec38(F.count(F.lit(1))).alias("n"))
         .localCheckpoint(eager=True)
     )
 
@@ -68,7 +68,7 @@ def _ps_grid(t: Tables) -> DataFrame:
 
 
 def _lambda_oracle() -> str:
-    hd = _sql_halfup_div
+    hd = sql_halfup_div
     return f"""
     WITH {_SQL_PS_GRID.strip()}
     , rowmax AS (
@@ -143,19 +143,19 @@ def stats_goodman_kruskal_lambda(spark: SparkSession, sf_dir: str) -> DataFrame:
     two = F.lit(2).cast("decimal(38,0)")
     return j.select(
         F.col("n").cast("long").alias("n"),
-        _halfup_div(
+        halfup_div(
             m6 * (F.col("sum_rowmax") - F.col("max_col")),
             F.col("n") - F.col("max_col"),
         )
         .cast("long")
         .alias("lambda_y_given_x_micro"),
-        _halfup_div(
+        halfup_div(
             m6 * (F.col("sum_colmax") - F.col("max_row")),
             F.col("n") - F.col("max_row"),
         )
         .cast("long")
         .alias("lambda_x_given_y_micro"),
-        _halfup_div(
+        halfup_div(
             m6
             * (
                 (F.col("sum_rowmax") + F.col("sum_colmax"))
@@ -174,7 +174,7 @@ def stats_goodman_kruskal_lambda(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _gk_tau_oracle() -> str:
-    hd = _sql_halfup_div
+    hd = sql_halfup_div
     return f"""
     WITH {_SQL_PS_GRID.strip()}
     , rows_ AS (
@@ -232,12 +232,12 @@ def stats_goodman_kruskal_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     m6 = F.lit(1_000_000).cast("decimal(38,0)")
     terms = rows_.crossJoin(F.broadcast(tot)).select(
-        _halfup_div(m6 * F.col("n") * F.col("a_x"), F.col("nx")).alias("t_x")
+        halfup_div(m6 * F.col("n") * F.col("a_x"), F.col("nx")).alias("t_x")
     ).agg(F.sum("t_x").alias("num_t"))
     j = tot.crossJoin(F.broadcast(cols)).crossJoin(F.broadcast(terms))
     return j.select(
         F.col("n").cast("long").alias("n"),
-        _halfup_div(
+        halfup_div(
             F.col("num_t") - m6 * F.col("b"),
             F.col("n") * F.col("n") - F.col("b"),
         )
@@ -282,8 +282,8 @@ def _freq_spectrum(t: Tables) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("c"))
     )
     return tf.groupBy("lang").agg(
-        F.sum(_dec(F.col("c"))).alias("n_tokens"),
-        _dec(F.count(F.lit(1))).alias("vocab"),
+        F.sum(dec38(F.col("c"))).alias("n_tokens"),
+        dec38(F.count(F.lit(1))).alias("vocab"),
         F.sum(F.when(F.col("c") == 1, 1).otherwise(0)).cast("decimal(38,0)").alias("v1"),
         F.sum(F.when(F.col("c") == 2, 1).otherwise(0)).cast("decimal(38,0)").alias("v2"),
     )
@@ -295,7 +295,7 @@ def _freq_spectrum(t: Tables) -> DataFrame:
 
 
 def _sichel_oracle() -> str:
-    hd = _sql_halfup_div
+    hd = sql_halfup_div
     return f"""
     WITH {_SQL_FREQ_SPECTRUM.strip()}
     SELECT lang, CAST(n_tokens AS BIGINT) AS n_tokens,
@@ -339,10 +339,10 @@ def text_sichel_guiraud_richness(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n_tokens").cast("long").alias("n_tokens"),
         F.col("vocab").cast("long").alias("vocab"),
         F.col("v2").cast("long").alias("v2"),
-        _halfup_div(m6 * F.col("v2"), F.col("vocab")).cast("long").alias(
+        halfup_div(m6 * F.col("v2"), F.col("vocab")).cast("long").alias(
             "sichel_s_micro"
         ),
-        _halfup_div(m6 * F.col("vocab") * F.col("vocab"), F.col("n_tokens"))
+        halfup_div(m6 * F.col("vocab") * F.col("vocab"), F.col("n_tokens"))
         .cast("long")
         .alias("guiraud_sq_micro"),
     ).orderBy("lang")
@@ -354,7 +354,7 @@ def text_sichel_guiraud_richness(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _gt_oracle() -> str:
-    hd = _sql_halfup_div
+    hd = sql_halfup_div
     return f"""
     WITH {_SQL_FREQ_SPECTRUM.strip()}
     SELECT lang, CAST(n_tokens AS BIGINT) AS n_tokens,
@@ -396,7 +396,7 @@ def corpus_good_turing_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     sp = _freq_spectrum(t)
     m6 = F.lit(1_000_000).cast("decimal(38,0)")
     c100 = F.lit(100).cast("decimal(38,0)")
-    p_unseen = _halfup_div(m6 * F.col("v1"), F.col("n_tokens"))
+    p_unseen = halfup_div(m6 * F.col("v1"), F.col("n_tokens"))
     return sp.select(
         "lang",
         F.col("n_tokens").cast("long").alias("n_tokens"),
@@ -408,7 +408,7 @@ def corpus_good_turing_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("v2") > 0,
             (
                 c100 * F.col("vocab")
-                + _halfup_div(
+                + halfup_div(
                     c100 * F.col("v1") * F.col("v1"),
                     F.lit(2).cast("decimal(38,0)") * F.col("v2"),
                 )
@@ -429,7 +429,7 @@ def _minhash_audit_oracle() -> str:
     kmatch = " + ".join(
         f"(CASE WHEN a.h{i} = b.h{i} THEN 1 ELSE 0 END)" for i in range(N_MINHASH)
     )
-    hd = _sql_halfup_div
+    hd = sql_halfup_div
     return f"""
     WITH norm AS (
 {_SQL_SHINGLES}
@@ -544,15 +544,15 @@ def dedup_minhash_estimator_audit(spark: SparkSession, sf_dir: str) -> DataFrame
         .join(gated_broadcast(sb), "doc_b")
         .select(
             k.alias("k"),
-            _halfup_div(m6 * _dec(inter), _dec(union)).alias("jac_micro"),
+            halfup_div(m6 * dec38(inter), dec38(union)).alias("jac_micro"),
         )
     )
     byk = jm.groupBy("k").agg(
         F.count(F.lit(1)).cast("long").alias("n_pairs"),
         F.sum("jac_micro").alias("sj"),
     )
-    est = _halfup_div(m6 * _dec(F.col("k")), F.lit(N_MINHASH).cast("decimal(38,0)"))
-    mean_j = _halfup_div(F.col("sj"), _dec(F.col("n_pairs")))
+    est = halfup_div(m6 * dec38(F.col("k")), F.lit(N_MINHASH).cast("decimal(38,0)"))
+    mean_j = halfup_div(F.col("sj"), dec38(F.col("n_pairs")))
     return byk.select(
         F.col("k").alias("n_sig_matches"),
         "n_pairs",

@@ -28,9 +28,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.exact import dec38, halfup_div, sql_halfup_div
 from ..registry import register
 from ..tables import Tables
-from .roundeleven import _dec, _halfup_div, _sql_halfup_div
 
 # ---------------------------------------------------------------------------
 # 1. Lepage combined location-scale rank test (A vs R quantity)
@@ -38,7 +38,7 @@ from .roundeleven import _dec, _halfup_div, _sql_halfup_div
 
 
 def _lepage_oracle() -> str:
-    hd = _sql_halfup_div
+    hd = sql_halfup_div
     return f"""
     WITH gv AS (
       SELECT CAST(l_quantity AS BIGINT) AS v,
@@ -140,8 +140,8 @@ def stats_lepage_location_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("v")
         .agg(
-            F.sum(_dec(F.col("ia"))).alias("na_v"),
-            F.sum(_dec(F.col("ir"))).alias("nr_v"),
+            F.sum(dec38(F.col("ia"))).alias("na_v"),
+            F.sum(dec38(F.col("ir"))).alias("nr_v"),
         )
         .localCheckpoint(eager=True)  # <= 50 rows; five consumers below
     )
@@ -221,7 +221,7 @@ CAP_USL_DAYS = 120
 
 
 def _capability_oracle() -> str:
-    hd = _sql_halfup_div
+    hd = sql_halfup_div
     lsl, usl = CAP_LSL_DAYS, CAP_USL_DAYS
     return f"""
     WITH lat AS (
@@ -303,9 +303,9 @@ def stats_process_capability_latency(spark: SparkSession, sf_dir: str) -> DataFr
         .select(F.datediff("ship", "odate").cast("long").alias("x"))
     )
     s = lat.agg(
-        _dec(F.count(F.lit(1))).alias("n"),
-        F.sum(_dec(F.col("x"))).alias("sx"),
-        F.sum(_dec(F.col("x")) * F.col("x")).alias("sxx"),
+        dec38(F.count(F.lit(1))).alias("n"),
+        F.sum(dec38(F.col("x"))).alias("sx"),
+        F.sum(dec38(F.col("x")) * F.col("x")).alias("sxx"),
         F.sum(F.when(F.col("x") < lsl, 1).otherwise(0)).cast("decimal(38,0)").alias(
             "n_below"
         ),
@@ -320,26 +320,26 @@ def stats_process_capability_latency(spark: SparkSession, sf_dir: str) -> DataFr
     )
     k3 = F.lit(1000).cast("decimal(38,0)")
     m6 = F.lit(1_000_000).cast("decimal(38,0)")
-    mg_milli = _halfup_div(k3 * mg, F.col("n"))
+    mg_milli = halfup_div(k3 * mg, F.col("n"))
     d = s.select(
         "n", "sx", "sxx", "n_below", "n_above", vc.alias("vc"), mg.alias("mg"),
         mg_milli.alias("mg_milli"),
     )
     return d.select(
         F.col("n").cast("long").alias("n"),
-        _halfup_div(k3 * F.col("sx"), F.col("n")).cast("long").alias("mean_milli"),
-        _halfup_div(k3 * F.col("vc"), F.col("n") * (F.col("n") - 1))
+        halfup_div(k3 * F.col("sx"), F.col("n")).cast("long").alias("mean_milli"),
+        halfup_div(k3 * F.col("vc"), F.col("n") * (F.col("n") - 1))
         .cast("long")
         .alias("var_milli"),
-        _halfup_div(m6 * F.col("n_below"), F.col("n")).cast("long").alias(
+        halfup_div(m6 * F.col("n_below"), F.col("n")).cast("long").alias(
             "below_lsl_ppm"
         ),
-        _halfup_div(m6 * F.col("n_above"), F.col("n")).cast("long").alias(
+        halfup_div(m6 * F.col("n_above"), F.col("n")).cast("long").alias(
             "above_usl_ppm"
         ),
         F.when(
             F.col("vc") > 0,
-            _halfup_div(
+            halfup_div(
                 m6 * F.lit((usl - lsl) ** 2) * F.col("n") * (F.col("n") - 1),
                 F.lit(36).cast("decimal(38,0)") * F.col("vc"),
             ).cast("long"),
@@ -350,7 +350,7 @@ def stats_process_capability_latency(spark: SparkSession, sf_dir: str) -> DataFr
                 F.when(F.col("mg") < 0, F.lit(-1)).otherwise(F.lit(1)).cast(
                     "decimal(38,0)"
                 )
-                * _halfup_div(
+                * halfup_div(
                     F.col("mg_milli") * F.col("mg_milli")
                     * F.col("n") * (F.col("n") - 1),
                     F.lit(9).cast("decimal(38,0)") * F.col("vc"),
@@ -370,7 +370,7 @@ PRECISION_FLOORS = ((4, 5), (9, 10), (19, 20))  # 0.80, 0.90, 0.95
 def _recall_floor_oracle() -> str:
     from .ml import _scored_labeled_sql
 
-    hd = _sql_halfup_div
+    hd = sql_halfup_div
     floors = ", ".join(f"({n}, {d})" for n, d in PRECISION_FLOORS)
     return (
         _scored_labeled_sql()
@@ -481,13 +481,13 @@ def ml_recall_at_precision_floor(spark: SparkSession, sf_dir: str) -> DataFrame:
             "tp",
             F.when(
                 F.col("v").isNotNull(),
-                _halfup_div(m6 * _dec(F.col("tp")), _dec(F.col("n_sel"))).cast(
+                halfup_div(m6 * dec38(F.col("tp")), dec38(F.col("n_sel"))).cast(
                     "long"
                 ),
             ).alias("precision_micro"),
             F.when(
                 F.col("v").isNotNull(),
-                _halfup_div(m6 * _dec(F.col("tp")), _dec(F.col("p"))).cast("long"),
+                halfup_div(m6 * dec38(F.col("tp")), dec38(F.col("p"))).cast("long"),
             ).alias("recall_micro"),
         )
         .orderBy(F.col("floor_num").cast("double") / F.col("floor_den"))
@@ -532,7 +532,7 @@ def _katz_oracle() -> str:
                 i=i,
                 prev=prev,
                 scale=KATZ_SCALE,
-                upd=_sql_halfup_div("s.y", str(KATZ_ATT_DEN)),
+                upd=sql_halfup_div("s.y", str(KATZ_ATT_DEN)),
             )
         )
         prev = f"k{i}"
@@ -596,11 +596,11 @@ def graph_katz_centrality_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
         s = (
             both.join(gated_broadcast(x.select(F.col("node").alias("u"), "x")), "u")
             .groupBy(F.col("v").alias("node"))
-            .agg(F.sum(_dec(F.col("x"))).alias("y"))
+            .agg(F.sum(dec38(F.col("x"))).alias("y"))
         )
         x = s.select(
             "node",
-            (F.lit(KATZ_SCALE) + _halfup_div(F.col("y"), att).cast("long")).alias(
+            (F.lit(KATZ_SCALE) + halfup_div(F.col("y"), att).cast("long")).alias(
                 "x"
             ),
         ).localCheckpoint(eager=True)
@@ -623,7 +623,7 @@ def _dfa_oracle() -> str:
     from ..functions.detmath import sql_det_ln_steps
     from .roundeleven2 import _SQL_DAILY_COUNTS_IDX
 
-    hd = _sql_halfup_div
+    hd = sql_halfup_div
     scales = ", ".join(str(s) for s in DFA_SCALES)
     # alpha = sum(c_i * ln F^2(2^i)) / (20 ln 2), c = (-3, -1, 1, 3)
     cexpr = ("sum((CASE s WHEN 8 THEN -3 WHEN 16 THEN -1 WHEN 32 THEN 1 "
@@ -711,7 +711,7 @@ def events_dfa_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = Tables(spark, sf_dir)
     idx = _daily_counts_idx(t).localCheckpoint(eager=True)  # calendar-sized
     tot = idx.agg(
-        _dec(F.count(F.lit(1))).alias("nd"), F.sum("y").alias("sy")
+        dec38(F.count(F.lit(1))).alias("nd"), F.sum("y").alias("sy")
     )
     b = idx.select(F.col("k").alias("k_b"), F.col("y").alias("y_b"))
     prof = (
@@ -737,12 +737,12 @@ def events_dfa_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "s",
             F.floor((F.col("k") - 1) / F.col("s")).alias("b"),
-            _dec(F.col("k")).alias("kk"),
+            dec38(F.col("k")).alias("kk"),
             F.col("p"),
         )
     )
     bsum = boxed.groupBy("s", "b").agg(
-        _dec(F.count(F.lit(1))).alias("m"),
+        dec38(F.count(F.lit(1))).alias("m"),
         F.sum("kk").alias("sx"),
         F.sum(F.col("kk") * F.col("kk")).alias("sxx"),
         F.sum("p").alias("sp"),
@@ -782,8 +782,8 @@ def events_dfa_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(3)
     )
     alpha = lnf2.agg(F.sum(c * F.col("lnf2")).alias("csum")).select(
-        _halfup_div(
-            F.lit(1000).cast("decimal(38,0)") * _dec(F.col("csum")),
+        halfup_div(
+            F.lit(1000).cast("decimal(38,0)") * dec38(F.col("csum")),
             F.lit(20 * LN2_MICRO).cast("decimal(38,0)"),
         )
         .cast("long")

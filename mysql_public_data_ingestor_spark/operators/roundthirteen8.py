@@ -28,9 +28,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.exact import dec38, halfup_div, sql_halfup_div
 from ..registry import register
 from ..tables import Tables
-from .roundeleven import _dec, _halfup_div, _sql_halfup_div
 
 # ---------------------------------------------------------------------------
 # 1. Circular concentration of the order weekday distribution
@@ -46,7 +46,7 @@ SIN7_MICRO = {1: 0, 2: 781831, 3: 974928, 4: 433884,
 
 
 def _circular_oracle() -> str:
-    hd = _sql_halfup_div
+    hd = sql_halfup_div
     cosc = " ".join(f"WHEN {d} THEN {c}" for d, c in sorted(COS7_MICRO.items()))
     sinc = " ".join(f"WHEN {d} THEN {c}" for d, c in sorted(SIN7_MICRO.items()))
     return f"""
@@ -105,12 +105,12 @@ def stats_circular_weekday_concentration(spark: SparkSession, sf_dir: str) -> Da
     )
     dow = (F.weekday(F.to_date("o_orderdate")) + 1).cast("long")
     dw = t.orders.select(dow.alias("dow")).groupBy("dow").agg(
-        _dec(F.count(F.lit(1))).alias("n_d")
+        dec38(F.count(F.lit(1))).alias("n_d")
     )
     s = dw.agg(
         F.sum("n_d").alias("n"),
-        F.sum(F.col("n_d") * _dec(cosc[F.col("dow")])).alias("c"),
-        F.sum(F.col("n_d") * _dec(sinc[F.col("dow")])).alias("sn"),
+        F.sum(F.col("n_d") * dec38(cosc[F.col("dow")])).alias("c"),
+        F.sum(F.col("n_d") * dec38(sinc[F.col("dow")])).alias("sn"),
         F.min_by("dow", F.struct((-F.col("n_d")).alias("a"), F.col("dow").alias("b")))
         .alias("modal_dow"),
     )
@@ -120,10 +120,10 @@ def stats_circular_weekday_concentration(spark: SparkSession, sf_dir: str) -> Da
     return s.select(
         F.col("n").cast("long").alias("n"),
         F.col("modal_dow").cast("long").alias("modal_dow"),
-        _halfup_div(m6 * r2, F.col("n") * F.col("n") * t12)
+        halfup_div(m6 * r2, F.col("n") * F.col("n") * t12)
         .cast("long")
         .alias("rbar_sq_micro"),
-        _halfup_div(F.lit(1000).cast("decimal(38,0)") * r2, F.col("n") * t12)
+        halfup_div(F.lit(1000).cast("decimal(38,0)") * r2, F.col("n") * t12)
         .cast("long")
         .alias("rayleigh_z_milli"),
     )
@@ -139,7 +139,7 @@ HUBS_REMOVED = 8
 def _hub_removal_oracle() -> str:
     from .graph import _SQL_EDGES
 
-    hd = _sql_halfup_div
+    hd = sql_halfup_div
     return _SQL_EDGES + f"""
     , deg AS (
       SELECT node, CAST(count(*) AS BIGINT) AS degree
@@ -245,7 +245,7 @@ def graph_hub_removal_robustness(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("n_nodes") - F.col("n_hubs_removed") - F.col("n_nodes_surviving")
             ).alias("n_isolated"),
             "max_degree_after",
-            _halfup_div(m6 * _dec(F.col("n_edges_surviving")), _dec(F.col("n_edges")))
+            halfup_div(m6 * dec38(F.col("n_edges_surviving")), dec38(F.col("n_edges")))
             .cast("long")
             .alias("edges_surviving_ppm"),
         )
@@ -262,7 +262,7 @@ YJ_BLOCKS = 32
 def _youden_jk_oracle() -> str:
     from .ml import _scored_labeled_sql
 
-    hd = _sql_halfup_div
+    hd = sql_halfup_div
     return (
         _scored_labeled_sql()
         + f"""
@@ -444,13 +444,13 @@ def ml_youden_threshold_jackknife(spark: SparkSession, sf_dir: str) -> DataFrame
     jm = jv.select(
         "b",
         "v",
-        _halfup_div(
+        halfup_div(
             m6
             * (
-                _dec(F.col("tp")) * F.col("qq")
-                - _dec(F.col("n_sel") - F.col("tp")) * F.col("pp")
+                dec38(F.col("tp")) * F.col("qq")
+                - dec38(F.col("n_sel") - F.col("tp")) * F.col("pp")
             ),
-            _dec(F.col("pp")) * F.col("qq"),
+            dec38(F.col("pp")) * F.col("qq"),
         ).alias("j_micro"),
     )
     wb = Window.partitionBy("b").orderBy(F.col("j_micro").desc(), F.col("v").asc())
@@ -471,7 +471,7 @@ def ml_youden_threshold_jackknife(spark: SparkSession, sf_dir: str) -> DataFrame
         F.countDistinct("v").cast("long").alias("n_distinct_thr"),
         F.sum("j_micro").alias("sj"),
     ).select(
-        "*", _halfup_div(F.col("sj"), _dec(F.col("n_blocks"))).alias("jbar")
+        "*", halfup_div(F.col("sj"), dec38(F.col("n_blocks"))).alias("jbar")
     )
     var_ = (
         jkrows.crossJoin(F.broadcast(jk.select("jbar")))
@@ -492,8 +492,8 @@ def ml_youden_threshold_jackknife(spark: SparkSession, sf_dir: str) -> DataFrame
             "thr_jk_max",
             "n_distinct_thr",
             F.col("jbar").cast("long").alias("j_jk_mean_micro"),
-            _halfup_div(
-                _dec(F.col("n_blocks") - 1) * F.col("ss"), _dec(F.col("n_blocks"))
+            halfup_div(
+                dec38(F.col("n_blocks") - 1) * F.col("ss"), dec38(F.col("n_blocks"))
             )
             .cast("long")
             .alias("jk_var_micro2"),
@@ -509,7 +509,7 @@ def ml_youden_threshold_jackknife(spark: SparkSession, sf_dir: str) -> DataFrame
 def _pq_distortion_oracle() -> str:
     from .similarity import PQ_CODEWORDS, PQ_M, PQ_SUBDIM
 
-    hd = _sql_halfup_div
+    hd = sql_halfup_div
     subs = " UNION ALL ".join(
         f"SELECT vec_id, {m} AS m, v[{m * PQ_SUBDIM + 1}:{(m + 1) * PQ_SUBDIM}] AS sv "
         "FROM emb"
@@ -562,8 +562,7 @@ def embedding_pq_distortion_audit(spark: SparkSession, sf_dir: str) -> DataFrame
 
     Derivation sharing: the subspace/codebook head is
     ``similarity._pq_sub_cb`` — the SAME object the ADC search scans,
-    extracted (not rewritten) this round with the verified consumer
-    re-entered in ``_EVIDENCE_MIN_ROUND``; codeword assignment reuses
+    extracted (not rewritten) in round 13; codeword assignment reuses
     the (round(d2, 9), cid) argmin tie-break verbatim.
 
     Exactness: the winning distance quantizes once at micro (floor
@@ -608,7 +607,7 @@ def embedding_pq_distortion_audit(spark: SparkSession, sf_dir: str) -> DataFrame
         assigned.groupBy("m")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_vecs"),
-            _halfup_div(F.sum(_dec(F.col("d2q"))), _dec(F.count(F.lit(1))))
+            halfup_div(F.sum(dec38(F.col("d2q"))), dec38(F.count(F.lit(1))))
             .cast("long")
             .alias("mean_d2_micro"),
             F.max("d2q").alias("max_d2_micro"),
@@ -703,7 +702,7 @@ def events_qs_seasonality_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select((F.col("k") - 1).alias("j"), (F.col("y") - F.col("y_prev")).alias("z"))
         .localCheckpoint(eager=True)  # calendar-sized; four consumers
     )
-    mt = zser.agg(_dec(F.count(F.lit(1))).alias("m"), F.sum("z").alias("sz"))
+    mt = zser.agg(dec38(F.count(F.lit(1))).alias("m"), F.sum("z").alias("sz"))
     wser = zser.crossJoin(F.broadcast(mt)).select(
         "j", (F.col("m") * F.col("z") - F.col("sz")).alias("w"), "m"
     )

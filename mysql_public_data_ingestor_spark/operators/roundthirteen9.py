@@ -31,9 +31,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.exact import dec38, halfup_div, sql_halfup_div
 from ..registry import register
 from ..tables import Tables
-from .roundeleven import _dec, _halfup_div, _sql_halfup_div
 
 # ---------------------------------------------------------------------------
 # 1. Sample entropy of the daily order series
@@ -56,7 +56,7 @@ def _sampen_oracle() -> str:
       FROM vals a JOIN vals b ON b.v <= a.v GROUP BY a.v
     ), iqr AS (
       SELECT greatest(1,
-        {_sql_halfup_div(
+        {sql_halfup_div(
             '''2 * ((SELECT min(v) FROM vc, nn WHERE cum >= (3 * n + 3) // 4)
                  - (SELECT min(v) FROM vc, nn WHERE cum >= (n + 3) // 4))''',
             '10')}) AS r
@@ -121,8 +121,8 @@ def events_sample_entropy_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (driver-contradicted, 3.29→3.71 s). Branches re-scan the tiny
     # parquet instead.
     idx = _daily_counts_idx(t)
-    nn = idx.agg(_dec(F.count(F.lit(1))).alias("n"))
-    vals = idx.groupBy(F.col("y").alias("v")).agg(_dec(F.count(F.lit(1))).alias("c"))
+    nn = idx.agg(dec38(F.count(F.lit(1))).alias("n"))
+    vals = idx.groupBy(F.col("y").alias("v")).agg(dec38(F.count(F.lit(1))).alias("c"))
     vb = vals.select(F.col("v").alias("v_b"), F.col("c").alias("c_b"))
     vc = (
         vals.join(F.broadcast(vb), F.col("v_b") <= F.col("v"))
@@ -141,7 +141,7 @@ def events_sample_entropy_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.greatest(
                 F.lit(1).cast("decimal(38,0)"),
-                _halfup_div(
+                halfup_div(
                     F.lit(2).cast("decimal(38,0)") * (F.col("q3") - F.col("q1")),
                     F.lit(10).cast("decimal(38,0)"),
                 ),
@@ -264,12 +264,12 @@ def events_interarrival_memory_coeff(spark: SparkSession, sf_dir: str) -> DataFr
         "event_type", "y", F.lag("y").over(w).alias("x")
     ).where(F.col("x").isNotNull() & F.col("y").isNotNull())
     agg = lagged.groupBy("event_type").agg(
-        _dec(F.count(F.lit(1))).alias("n"),
-        F.sum(_dec(F.col("x"))).alias("sx"),
-        F.sum(_dec(F.col("y"))).alias("sy"),
-        F.sum(_dec(F.col("x")) * F.col("y")).alias("sxy"),
-        F.sum(_dec(F.col("x")) * F.col("x")).alias("sxx"),
-        F.sum(_dec(F.col("y")) * F.col("y")).alias("syy"),
+        dec38(F.count(F.lit(1))).alias("n"),
+        F.sum(dec38(F.col("x"))).alias("sx"),
+        F.sum(dec38(F.col("y"))).alias("sy"),
+        F.sum(dec38(F.col("x")) * F.col("y")).alias("sxy"),
+        F.sum(dec38(F.col("x")) * F.col("x")).alias("sxx"),
+        F.sum(dec38(F.col("y")) * F.col("y")).alias("syy"),
     )
     num = F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")
     denx = F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
@@ -296,7 +296,7 @@ BA_Z_SQ_DEN = 2500
 
 
 def _bland_altman_oracle() -> str:
-    hd = _sql_halfup_div
+    hd = sql_halfup_div
     return f"""
     WITH d AS (
       SELECT CAST(CAST(floor(l.l_extendedprice * 100.0 + 0.5) AS BIGINT)
@@ -369,16 +369,16 @@ def stats_bland_altman_price_agreement(spark: SparkSession, sf_dir: str) -> Data
         )
         .select(
             (
-                _dec(F.floor(F.col("l_extendedprice") * F.lit(100.0) + F.lit(0.5))
+                dec38(F.floor(F.col("l_extendedprice") * F.lit(100.0) + F.lit(0.5))
                      .cast("long"))
-                - _dec(F.floor(F.col("p_retailprice") * F.lit(100.0) + F.lit(0.5))
+                - dec38(F.floor(F.col("p_retailprice") * F.lit(100.0) + F.lit(0.5))
                        .cast("long"))
-                * _dec(F.col("l_quantity").cast("long"))
+                * dec38(F.col("l_quantity").cast("long"))
             ).alias("d")
         )
     )
     s = d.agg(
-        _dec(F.count(F.lit(1))).alias("n"),
+        dec38(F.count(F.lit(1))).alias("n"),
         F.sum("d").alias("sd"),
         F.sum(F.col("d") * F.col("d")).alias("sdd"),
     )
@@ -388,14 +388,14 @@ def stats_bland_altman_price_agreement(spark: SparkSession, sf_dir: str) -> Data
         "n",
         "sd",
         vc.alias("vc"),
-        _halfup_div(
+        halfup_div(
             F.lit(BA_Z_SQ_NUM).cast("decimal(38,0)") * k3 * vc,
             F.lit(BA_Z_SQ_DEN).cast("decimal(38,0)")
             * F.col("n")
             * (F.col("n") - 1),
         ).alias("loa_sq_milli"),
     )
-    dev_milli = _halfup_div(k3 * (F.col("d") * F.col("n") - F.col("sd")), F.col("n"))
+    dev_milli = halfup_div(k3 * (F.col("d") * F.col("n") - F.col("sd")), F.col("n"))
     w = (
         d.crossJoin(F.broadcast(lim))
         .select(
@@ -409,17 +409,17 @@ def stats_bland_altman_price_agreement(spark: SparkSession, sf_dir: str) -> Data
     )
     m6 = F.lit(1_000_000).cast("decimal(38,0)")
     i64max = F.lit(9223372036854775807).cast("decimal(38,0)")
-    var_milli = _halfup_div(k3 * F.col("vc"), F.col("n") * (F.col("n") - 1))
+    var_milli = halfup_div(k3 * F.col("vc"), F.col("n") * (F.col("n") - 1))
     return lim.crossJoin(F.broadcast(w)).select(
         F.col("n").cast("long").alias("n"),
-        _halfup_div(k3 * F.col("sd"), F.col("n")).cast("long").alias("bias_milli"),
+        halfup_div(k3 * F.col("sd"), F.col("n")).cast("long").alias("bias_milli"),
         # int64 magnitude guards (the adversarial value-fuzz profile
         # inflates cents^2 variances past BIGINT; both engines emit
         # NULL identically rather than overflow)
         F.when(var_milli <= i64max, var_milli.cast("long")).alias("var_d_milli"),
         F.when(F.col("loa_sq_milli") <= i64max,
                F.col("loa_sq_milli").cast("long")).alias("loa_sq_milli"),
-        _halfup_div(m6 * F.col("n_within"), F.col("n"))
+        halfup_div(m6 * F.col("n_within"), F.col("n"))
         .cast("long")
         .alias("within_loa_ppm"),
     )
@@ -532,7 +532,7 @@ def stats_bh_fdr_nation_urgency(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy(F.col("n_name").alias("nation"))
         .agg(
-            _dec(F.count(F.lit(1))).alias("n_i"),
+            dec38(F.count(F.lit(1))).alias("n_i"),
             F.sum(
                 F.when(F.col("o_orderpriority") == "1-URGENT", 1).otherwise(0)
             )
@@ -607,7 +607,7 @@ ESS_MAX_LAG = 7
 def _ess_oracle() -> str:
     from .roundeleven2 import _SQL_DAILY_COUNTS_IDX
 
-    hd = _sql_halfup_div
+    hd = sql_halfup_div
     lag_cols = " + ".join(
         f"""(SELECT CAST(sum(a.w * b.w) AS HUGEINT) FROM wser a
              JOIN wser b ON b.j = a.j + {L})"""
@@ -662,7 +662,7 @@ def stats_effective_sample_size_daily(spark: SparkSession, sf_dir: str) -> DataF
 
     t = Tables(spark, sf_dir)
     idx = _daily_counts_idx(t).localCheckpoint(eager=True)
-    mt = idx.agg(_dec(F.count(F.lit(1))).alias("m"), F.sum("y").alias("sy"))
+    mt = idx.agg(dec38(F.count(F.lit(1))).alias("m"), F.sum("y").alias("sy"))
     wser = idx.crossJoin(F.broadcast(mt)).select(
         F.col("k").alias("j"),
         (F.col("m") * F.col("y") - F.col("sy")).alias("w"),
@@ -682,10 +682,10 @@ def stats_effective_sample_size_daily(spark: SparkSession, sf_dir: str) -> DataF
     den = F.col("c0") + F.lit(2).cast("decimal(38,0)") * csum
     return cc.select(
         F.col("m").cast("long").alias("n_days"),
-        F.when(F.col("c0") > 0, _halfup_div(m6 * csum, F.col("c0")).cast("long"))
+        F.when(F.col("c0") > 0, halfup_div(m6 * csum, F.col("c0")).cast("long"))
         .alias("sum_r_micro"),
         F.when(
             (F.col("c0") > 0) & (den > 0),
-            _halfup_div(k3 * F.col("m") * F.col("c0"), den).cast("long"),
+            halfup_div(k3 * F.col("m") * F.col("c0"), den).cast("long"),
         ).alias("ess_milli"),
     )

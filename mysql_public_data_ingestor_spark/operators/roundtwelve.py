@@ -1,13 +1,8 @@
-"""Round-12 banked operator queue — built AND gated in round 11, to be
-activated when the round-12 driver window opens (the same-commit gate
-rule: ``tests/test_roundtwelve.py`` carries raw-frame oracle parity,
-plan bars and Python replicas with float anchors; SCALE.md §5j.6
-records the ×10 ladder from THIS round's session).
+"""Round-12 operator batch F.
 
-NOT imported by ``registry._ensure_loaded`` yet — the round-11 window
-carries 49 unverified names; registering these now would strand their
-evidence outside the 50-slot window. ``activate()`` is the round-12
-switch.
+Gates: raw-frame oracle parity, plan bars and Python replicas with
+float anchors in ``tests/test_roundtwelve.py``; SCALE.md §5j.6
+records the ×10 ladder.
 
 Batch theme — scale-curve and audit completions: spectral entropy of
 the fixed-period periodogram, the Fano-factor burstiness curve across
@@ -21,34 +16,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.exact import dec38, halfup_div, sql_halfup_div
+from ..registry import register
 from ..tables import Tables
-from .roundeleven import _dec, _halfup_div, _sql_halfup_div
-
-QUEUE: list[tuple] = []
-
-
-def _queued(name: str, oracle: str):
-    def deco(fn):
-        QUEUE.append((name, fn, oracle, fn.__doc__ or ""))
-        return fn
-
-    return deco
-
-
-_ACTIVATED = False
-
-
-def activate() -> None:
-    """Register every queued query (round-12 switch; idempotent)."""
-    global _ACTIVATED
-    if _ACTIVATED:
-        return
-    from ..registry import register
-
-    for name, fn, oracle, doc in QUEUE:
-        register(name, oracle=oracle, doc=doc)(fn)
-    _ACTIVATED = True
-
 
 # ---------------------------------------------------------------------------
 # 1. Spectral entropy over the fixed-period periodogram shares
@@ -71,7 +41,7 @@ def _spectral_oracle() -> str:
       FROM cent"""
         )
     unions = " UNION ALL ".join(per_p)
-    hd = _sql_halfup_div
+    hd = sql_halfup_div
     return f"""
     WITH daily AS (
       SELECT CAST(o_orderdate AS DATE) AS day, CAST(count(*) AS BIGINT) AS y
@@ -108,7 +78,7 @@ def _spectral_oracle() -> str:
     """
 
 
-@_queued("events_spectral_entropy_periods", _spectral_oracle())
+@register("events_spectral_entropy_periods", _spectral_oracle())
 def events_spectral_entropy_periods(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spectral ENTROPY of the fixed-period periodogram: normalize the
     (7, 30, 91)-day spectral powers of the daily order-count series to
@@ -139,7 +109,7 @@ def events_spectral_entropy_periods(spark: SparkSession, sf_dir: str) -> DataFra
         .agg(F.count(F.lit(1)).cast("long").alias("k"))
     )
     tot = idx.agg(
-        _dec(F.count(F.lit(1))).alias("n"), _dec(F.sum("y")).alias("s")
+        dec38(F.count(F.lit(1))).alias("n"), dec38(F.sum("y")).alias("s")
     )
     cent = idx.crossJoin(F.broadcast(tot)).select(
         "k", (F.col("n") * F.col("y") - F.col("s")).alias("z")
@@ -164,13 +134,13 @@ def events_spectral_entropy_periods(spark: SparkSession, sf_dir: str) -> DataFra
         .filter(F.col("tpw") > 0)
         .select(
             "period",
-            _halfup_div(m6 * F.col("p"), F.col("tpw")).cast("long").alias("share_micro"),
+            halfup_div(m6 * F.col("p"), F.col("tpw")).cast("long").alias("share_micro"),
         )
     )
     LN_1E6_MICRO = 13_815_511  # det-ln(1e6) micro literal, shared
     ent = shares.filter(F.col("share_micro") > 0).select(
         (
-            _dec(F.col("share_micro"))
+            dec38(F.col("share_micro"))
             * (F.lit(LN_1E6_MICRO).cast("decimal(38,0)") - det_ln_q(F.col("share_micro")))
         ).alias("hterm")
     ).agg(F.sum("hterm").alias("hraw"))
@@ -179,7 +149,7 @@ def events_spectral_entropy_periods(spark: SparkSession, sf_dir: str) -> DataFra
         .select(
             "period",
             "share_micro",
-            _halfup_div(F.col("hraw"), F.lit(10**6).cast("decimal(38,0)"))
+            halfup_div(F.col("hraw"), F.lit(10**6).cast("decimal(38,0)"))
             .cast("long")
             .alias("spectral_entropy_micro"),
         )
@@ -195,7 +165,7 @@ FANO_WINDOWS_H = (1, 6, 24, 168)
 
 
 def _fano_oracle() -> str:
-    hd = _sql_halfup_div
+    hd = sql_halfup_div
     per_w = []
     for w in FANO_WINDOWS_H:
         per_w.append(
@@ -223,7 +193,7 @@ def _fano_oracle() -> str:
     """
 
 
-@_queued("events_fano_factor_curve", _fano_oracle())
+@register("events_fano_factor_curve", _fano_oracle())
 def events_fano_factor_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fano factor (variance-to-mean of bucket counts) of the event
     stream across window widths 1h/6h/24h/168h — the SCALE-CURVE form
@@ -256,9 +226,9 @@ def events_fano_factor_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         cells = part if cells is None else cells.unionAll(part)
     s = cells.groupBy("window_h").agg(
-        _dec(F.count(F.lit(1))).alias("m"),
-        _dec(F.sum("c")).alias("sc"),
-        F.sum(_dec(F.col("c")) * F.col("c")).alias("scc"),
+        dec38(F.count(F.lit(1))).alias("m"),
+        dec38(F.sum("c")).alias("sc"),
+        F.sum(dec38(F.col("c")) * F.col("c")).alias("scc"),
     )
     m6 = F.lit(1_000_000).cast("decimal(38,0)")
     return s.select(
@@ -271,7 +241,7 @@ def events_fano_factor_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             # draft carried an extra m on both sides (F/m, parity green
             # — the twin-sided class); the replica's float var/mean
             # anchor caught it, the FOURTH such catch this round
-            _halfup_div(
+            halfup_div(
                 m6 * (F.col("m") * F.col("scc") - F.col("sc") * F.col("sc")),
                 (F.col("m") - 1) * F.col("sc"),
             ),
@@ -289,7 +259,7 @@ PUNCT_CLASSES = (".", ",", "!", "?", ";", ":")
 
 
 def _punct_oracle() -> str:
-    hd = _sql_halfup_div
+    hd = sql_halfup_div
     per_c = []
     for i, ch in enumerate(PUNCT_CLASSES):
         esc = ch
@@ -316,7 +286,7 @@ def _punct_oracle() -> str:
     """
 
 
-@_queued("text_punct_profile_chi2_by_source", _punct_oracle())
+@register("text_punct_profile_chi2_by_source", _punct_oracle())
 def text_punct_profile_chi2_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Punctuation-profile chi-square across sources: the distribution
     of {'.', ',', '!', '?', ';', ':'} marks per source against the
@@ -339,7 +309,7 @@ def text_punct_profile_chi2_by_source(spark: SparkSession, sf_dir: str) -> DataF
     for i, ch in enumerate(PUNCT_CLASSES):
         cnt = F.length(F.col("text")) - F.length(F.regexp_replace("text", f"\\{ch}", ""))
         part = t.documents.groupBy("source").agg(
-            _dec(F.sum(cnt)).alias("o")
+            dec38(F.sum(cnt)).alias("o")
         ).select("source", F.lit(i).cast("long").alias("cls"), "o")
         cells = part if cells is None else cells.unionAll(part)
     cells = cells.filter(F.col("o") > 0)
@@ -356,7 +326,7 @@ def text_punct_profile_chi2_by_source(spark: SparkSession, sf_dir: str) -> DataF
             "source",
             "cls",
             F.col("o").cast("long").alias("n_marks"),
-            _halfup_div(m6 * diff * diff, F.col("n") * F.col("r") * F.col("c"))
+            halfup_div(m6 * diff * diff, F.col("n") * F.col("r") * F.col("c"))
             .cast("long")
             .alias("chi2_contrib_micro"),
         )
@@ -424,7 +394,7 @@ def _ktruss_oracle() -> str:
     )
 
 
-@_queued("graph_ktruss_2peel_edges", _ktruss_oracle())
+@register("graph_ktruss_2peel_edges", _ktruss_oracle())
 def graph_ktruss_2peel_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two peeling rounds toward the {TRUSS_K}-truss of the
     co-purchase graph: round 1 keeps edges in >= {TRUSS_K}-2 triangles
@@ -568,7 +538,7 @@ def _perm_importance_oracle() -> str:
     )
 
 
-@_queued("ml_permutation_importance_score", _perm_importance_oracle())
+@register("ml_permutation_importance_score", _perm_importance_oracle())
 def ml_permutation_importance_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PERMUTATION IMPORTANCE of the quality-classifier score against
     the rule-gate label: mid-rank Mann-Whitney AUC on the true
@@ -620,8 +590,8 @@ def ml_permutation_importance_score(spark: SparkSession, sf_dir: str) -> DataFra
 
     def auc_terms(df, score_col):
         bins = df.groupBy(F.col(score_col).alias("s")).agg(
-            _dec(F.count(F.lit(1))).alias("nb"),
-            _dec(F.sum("label")).alias("n1b"),
+            dec38(F.count(F.lit(1))).alias("nb"),
+            dec38(F.sum("label")).alias("n1b"),
         )
         b2 = bins.select(F.col("s").alias("s2"), F.col("nb").alias("nb2"))
         cum = (
@@ -673,7 +643,7 @@ BKM_P = 2_147_483_647
 
 def _bkmerge_oracle() -> str:
     h = f"((((doc_id % {BKM_P}) * {BKM_A} + {BKM_B}) % {BKM_P}))"
-    hd = _sql_halfup_div
+    hd = sql_halfup_div
     return f"""
     WITH hashed AS (
       SELECT doc_id, doc_id % 2 AS shard, {h} AS h FROM documents
@@ -702,7 +672,7 @@ def _bkmerge_oracle() -> str:
     """
 
 
-@_queued("sketch_bottomk_merge_audit", _bkmerge_oracle())
+@register("sketch_bottomk_merge_audit", _bkmerge_oracle())
 def sketch_bottomk_merge_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mergeability audit for the bottom-k sketch: build per-shard
     bottom-k sketches (doc_id parity shards), merge them by keeping
@@ -740,9 +710,9 @@ def sketch_bottomk_merge_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("long").alias("n_common")
     )
     nn = hashed.agg(F.count(F.lit(1)).cast("long").alias("n_total"))
-    est = _halfup_div(
+    est = halfup_div(
         (F.lit(BKM_K).cast("decimal(38,0)") - 1) * F.lit(BKM_P).cast("decimal(38,0)"),
-        _dec(F.col("thr_merged")),
+        dec38(F.col("thr_merged")),
     )
     return (
         thr_m.crossJoin(F.broadcast(thr_d))

@@ -30,9 +30,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.exact import dec38, halfup_div, sql_halfup_div
 from ..registry import register
 from ..tables import Tables
-from .roundeleven import _dec, _halfup_div, _sql_halfup_div
 
 # ---------------------------------------------------------------------------
 # 1. Randomized-response audit over market segments
@@ -47,7 +47,7 @@ def _sha_mod_sql(expr: str, mod: int) -> str:
 
 
 def _rr_oracle() -> str:
-    hd = _sql_halfup_div
+    hd = sql_halfup_div
     keep = _sha_mod_sql("'rr|' || CAST(c_custkey AS VARCHAR)", RR_KEEP_DEN)
     return f"""
     WITH segs AS (
@@ -151,13 +151,13 @@ def privacy_randomized_response_audit(spark: SparkSession, sf_dir: str) -> DataF
     )
     nn = rep.agg(F.count(F.lit(1)).cast("long").alias("n"))
     m6 = F.lit(1_000_000).cast("decimal(38,0)")
-    est = _halfup_div(
+    est = halfup_div(
         m6
         * (
-            _dec(F.lit(RR_KEEP_DEN) * F.col("k") * F.coalesce(F.col("reported_n"), F.lit(0)))
+            dec38(F.lit(RR_KEEP_DEN) * F.col("k") * F.coalesce(F.col("reported_n"), F.lit(0)))
             - F.col("n")
         ),
-        _dec(F.lit(RR_KEEP_NUM) * F.col("k")),
+        dec38(F.lit(RR_KEEP_NUM) * F.col("k")),
     )
     return (
         truth.join(obs, "segment", "left")
@@ -184,7 +184,7 @@ CLUSTER_FILES = 32
 
 
 def _cluster_depth_oracle() -> str:
-    hd = _sql_halfup_div
+    hd = sql_halfup_div
     fcount = CLUSTER_FILES
     keys = [
         ("l_orderkey", "CAST(l_orderkey AS BIGINT)"),
@@ -298,7 +298,7 @@ def layout_clustering_depth_audit(spark: SparkSession, sf_dir: str) -> DataFrame
         ov.groupBy("key_name")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_files"),
-            _halfup_div(m6 * _dec(F.sum("depth")), _dec(F.count(F.lit(1))))
+            halfup_div(m6 * dec38(F.sum("depth")), dec38(F.count(F.lit(1))))
             .cast("long")
             .alias("avg_depth_micro"),
             F.max("depth").alias("max_depth"),
@@ -317,7 +317,7 @@ HUB_K = 10
 
 
 def _hubness_oracle() -> str:
-    hd = _sql_halfup_div
+    hd = sql_halfup_div
     B, CAP, K = HUB_BUCKETS, HUB_PER_BUCKET, HUB_K
     return f"""
     WITH ranked AS (
@@ -440,7 +440,7 @@ def embedding_knn_hubness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.floor(F.col("x") * 1000000.0 + 0.5).cast("long").alias("xq"),
     )
     norms = vq.groupBy("vec_id").agg(
-        F.sum(_dec(F.col("xq") * F.col("xq"))).alias("n2")
+        F.sum(dec38(F.col("xq") * F.col("xq"))).alias("n2")
     )
     a = vq.select(F.col("vec_id").alias("va"), "pos", F.col("xq").alias("xa"))
     bq = vq.select(F.col("vec_id").alias("vb"), "pos", F.col("xq").alias("xb"))
@@ -448,7 +448,7 @@ def embedding_knn_hubness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         a.join(bq, ["pos"])
         .filter(F.col("va") < F.col("vb"))
         .groupBy("va", "vb")
-        .agg(F.sum(_dec(F.col("xa") * F.col("xb"))).alias("dot"))
+        .agg(F.sum(dec38(F.col("xa") * F.col("xb"))).alias("dot"))
     )
     na = norms.select(F.col("vec_id").alias("va"), F.col("n2").alias("na"))
     nb = norms.select(F.col("vec_id").alias("vb"), F.col("n2").alias("nb"))
@@ -495,8 +495,8 @@ def embedding_knn_hubness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.when(F.col("k_occ") == 0, 1).otherwise(0))
         .cast("long")
         .alias("n_antihubs"),
-        F.sum(_dec(F.col("k_occ")) * F.col("k_occ")).alias("sksq"),
-        _dec(F.sum("k_occ")).alias("sk"),
+        F.sum(dec38(F.col("k_occ")) * F.col("k_occ")).alias("sksq"),
+        dec38(F.sum("k_occ")).alias("sk"),
     )
     m6 = F.lit(1_000_000).cast("decimal(38,0)")
     return agg.select(
@@ -505,9 +505,9 @@ def embedding_knn_hubness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "max_k_occ",
         "n_hubs",
         "n_antihubs",
-        _halfup_div(
-            m6 * (_dec(F.col("n_sample")) * F.col("sksq") - F.col("sk") * F.col("sk")),
-            _dec(F.col("n_sample")) * F.col("n_sample"),
+        halfup_div(
+            m6 * (dec38(F.col("n_sample")) * F.col("sksq") - F.col("sk") * F.col("sk")),
+            dec38(F.col("n_sample")) * F.col("n_sample"),
         )
         .cast("long")
         .alias("k_occ_var_micro"),
@@ -520,7 +520,7 @@ def embedding_knn_hubness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ccc_oracle() -> str:
-    hd = _sql_halfup_div
+    hd = sql_halfup_div
     return f"""
     WITH lx AS (
       SELECT l_orderkey,
@@ -591,12 +591,12 @@ def stats_lin_ccc_reconciliation(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.floor(F.col("o_totalprice") * 100.0 + 0.5).cast("long").alias("x"),
     ).join(lx, "l_orderkey")
     s = pairs.agg(
-        _dec(F.count(F.lit(1))).alias("n"),
-        _dec(F.sum("x")).alias("sx"),
-        _dec(F.sum("y")).alias("sy"),
-        F.sum(_dec(F.col("x")) * F.col("x")).alias("sxx"),
-        F.sum(_dec(F.col("y")) * F.col("y")).alias("syy"),
-        F.sum(_dec(F.col("x")) * F.col("y")).alias("sxy"),
+        dec38(F.count(F.lit(1))).alias("n"),
+        dec38(F.sum("x")).alias("sx"),
+        dec38(F.sum("y")).alias("sy"),
+        F.sum(dec38(F.col("x")) * F.col("x")).alias("sxx"),
+        F.sum(dec38(F.col("y")) * F.col("y")).alias("syy"),
+        F.sum(dec38(F.col("x")) * F.col("y")).alias("sxy"),
     )
     m6 = F.lit(1_000_000).cast("decimal(38,0)")
     vx = F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
@@ -609,7 +609,7 @@ def stats_lin_ccc_reconciliation(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("sy").cast("long").alias("sum_lines_cents"),
         F.when(
             den > 0,
-            _halfup_div(
+            halfup_div(
                 m6 * 2 * (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")),
                 den,
             ).cast("long"),
@@ -627,7 +627,7 @@ DM_SEASON = 7
 def _dm_oracle() -> str:
     from .roundeleven2 import _SQL_DAILY_COUNTS_IDX
 
-    hd = _sql_halfup_div
+    hd = sql_halfup_div
     s = DM_SEASON
     return f"""
     WITH {_SQL_DAILY_COUNTS_IDX}
@@ -702,7 +702,7 @@ def stats_diebold_mariano_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     d = pairs.agg(
-        _dec(F.count(F.lit(1))).alias("n"),
+        dec38(F.count(F.lit(1))).alias("n"),
         F.sum("l_naive").alias("sl1"),
         F.sum("l_seasonal").alias("sl7"),
         F.sum(F.col("l_naive") - F.col("l_seasonal")).alias("sd"),
@@ -719,7 +719,7 @@ def stats_diebold_mariano_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("sl7").cast("long").alias("sum_loss_seasonal"),
         F.when(
             var > 0,
-            _halfup_div(m6 * F.col("sd") * F.col("sd"), var).cast("long")
+            halfup_div(m6 * F.col("sd") * F.col("sd"), var).cast("long")
             * F.col("n").cast("long")
             * F.when(F.col("sd") < 0, F.lit(-1)).otherwise(F.lit(1)),
         )

@@ -1,13 +1,8 @@
-"""Round-12 banked operator queue, batch G — built AND gated in round
-11 (same-commit rule: ``tests/test_roundtwelve2.py`` carries raw-frame
-oracle parity, plan bars and Python replicas with float anchors;
-SCALE.md §5j.8 records the ×10 ladder from this round's session).
+"""Round-12 operator batch G.
 
-NOT imported by ``registry._ensure_loaded`` yet — the round-11 window
-is exactly full at 50 unverified names; registering these now would
-strand their evidence outside the driver's evaluation window.
-``activate()`` is the round-12 switch (flip together with
-``roundtwelve.activate()``).
+Gates: raw-frame oracle parity, plan bars and Python replicas with
+float anchors in ``tests/test_roundtwelve2.py``; SCALE.md §5j.8
+records the ×10 ladder.
 
 Batch theme — plan/layout cost audits and ordered-category tests: a
 bipartite-projection inflation audit for the co-purchase graph build,
@@ -31,34 +26,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.exact import dec38, halfup_div, sql_halfup_div
+from ..registry import register
 from ..tables import Tables
-from .roundeleven import _dec, _halfup_div, _sql_halfup_div
-
-QUEUE: list[tuple] = []
-
-
-def _queued(name: str, oracle: str):
-    def deco(fn):
-        QUEUE.append((name, fn, oracle, fn.__doc__ or ""))
-        return fn
-
-    return deco
-
-
-_ACTIVATED = False
-
-
-def activate() -> None:
-    """Register every queued query (round-12 switch; idempotent)."""
-    global _ACTIVATED
-    if _ACTIVATED:
-        return
-    from ..registry import register
-
-    for name, fn, oracle, doc in QUEUE:
-        register(name, oracle=oracle, doc=doc)(fn)
-    _ACTIVATED = True
-
 
 # ---------------------------------------------------------------------------
 # 1. Bipartite-projection inflation audit (order x part -> co-purchase)
@@ -66,7 +36,7 @@ def activate() -> None:
 
 
 def _bipartite_oracle() -> str:
-    hd = _sql_halfup_div
+    hd = sql_halfup_div
     return f"""
     WITH li AS (
       SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
@@ -98,7 +68,7 @@ def _bipartite_oracle() -> str:
     """
 
 
-@_queued("graph_bipartite_projection_audit", _bipartite_oracle())
+@register("graph_bipartite_projection_audit", _bipartite_oracle())
 def graph_bipartite_projection_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cost audit of the order x part bipartite projection that builds
     the co-purchase graph: both side degree profiles, the pair volume
@@ -126,8 +96,8 @@ def graph_bipartite_projection_audit(spark: SparkSession, sf_dir: str) -> DataFr
 
     t = Tables(spark, sf_dir)
     li = t.lineitem.select("l_orderkey", "l_partkey").distinct()
-    odeg = li.groupBy("l_orderkey").agg(_dec(F.count(F.lit(1))).alias("d"))
-    pdeg = li.groupBy("l_partkey").agg(_dec(F.count(F.lit(1))).alias("d"))
+    odeg = li.groupBy("l_orderkey").agg(dec38(F.count(F.lit(1))).alias("d"))
+    pdeg = li.groupBy("l_partkey").agg(dec38(F.count(F.lit(1))).alias("d"))
     two = F.lit(2).cast("decimal(38,0)")
     osum = odeg.agg(
         F.count(F.lit(1)).cast("long").alias("n_orders"),
@@ -139,7 +109,7 @@ def graph_bipartite_projection_audit(spark: SparkSession, sf_dir: str) -> DataFr
         F.max("d").cast("long").alias("max_part_deg"),
     )
     esum = edge_table(spark, t, sf_dir).agg(
-        _dec(F.count(F.lit(1))).alias("n_edges")
+        dec38(F.count(F.lit(1))).alias("n_edges")
     )
     m6 = F.lit(1_000_000).cast("decimal(38,0)")
     return (
@@ -154,7 +124,7 @@ def graph_bipartite_projection_audit(spark: SparkSession, sf_dir: str) -> DataFr
             F.col("n_edges").cast("long").alias("distinct_edges"),
             F.when(
                 F.col("n_edges") > 0,
-                _halfup_div(m6 * F.col("pair_gen"), F.col("n_edges")),
+                halfup_div(m6 * F.col("pair_gen"), F.col("n_edges")),
             )
             .cast("long")
             .alias("inflation_micro"),
@@ -174,7 +144,7 @@ def _mi_oracle() -> str:
     from ..functions.detmath import sql_det_ln_steps
     from .corpus import _SQL_TOKENS
 
-    hd = _sql_halfup_div
+    hd = sql_halfup_div
     return f"""
     WITH docs AS (
       SELECT lang,
@@ -201,7 +171,7 @@ def _mi_oracle() -> str:
     """
 
 
-@_queued("corpus_mi_lang_length", _mi_oracle())
+@register("corpus_mi_lang_length", _mi_oracle())
 def corpus_mi_lang_length(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mutual information between document language and length bucket
     (50-token buckets, top-coded at {MI_BUCKET_MAX}): per-cell
@@ -247,7 +217,7 @@ def corpus_mi_lang_length(spark: SparkSession, sf_dir: str) -> DataFrame:
         "lang",
         "lb",
         F.col("c").alias("n_docs"),
-        _halfup_div(_dec(F.col("c")) * _dec(ln_num - ln_den), _dec(F.col("n")))
+        halfup_div(dec38(F.col("c")) * dec38(ln_num - ln_den), dec38(F.col("n")))
         .cast("long")
         .alias("mi_contrib_micro"),
     ).orderBy("lang", "lb")
@@ -259,7 +229,7 @@ def corpus_mi_lang_length(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _armitage_oracle() -> str:
-    hd = _sql_halfup_div
+    hd = sql_halfup_div
     return f"""
     WITH lab AS (
       SELECT CAST(substr(o_orderpriority, 1, 1) AS BIGINT) AS j,
@@ -292,7 +262,7 @@ def _armitage_oracle() -> str:
     """
 
 
-@_queued("stats_cochran_armitage_trend", _armitage_oracle())
+@register("stats_cochran_armitage_trend", _armitage_oracle())
 def stats_cochran_armitage_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cochran–Armitage trend test: does the proportion of finished
     ('F') orders TREND monotonically across the five ordered priority
@@ -319,17 +289,17 @@ def stats_cochran_armitage_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("o_orderstatus") == "F", 1).otherwise(0).alias("pos"),
     )
     cells = lab.groupBy("j").agg(
-        _dec(F.count(F.lit(1))).alias("n_j"), _dec(F.sum("pos")).alias("r_j")
+        dec38(F.count(F.lit(1))).alias("n_j"), dec38(F.sum("pos")).alias("r_j")
     )
     tot = cells.agg(
         F.sum("n_j").alias("n"),
         F.sum("r_j").alias("r"),
-        F.sum(_dec(F.col("j")) * F.col("n_j")).alias("sns"),
-        F.sum(_dec(F.col("j")) * F.col("j") * F.col("n_j")).alias("snss"),
+        F.sum(dec38(F.col("j")) * F.col("n_j")).alias("sns"),
+        F.sum(dec38(F.col("j")) * F.col("j") * F.col("n_j")).alias("snss"),
     )
     tn_parts = cells.crossJoin(F.broadcast(tot)).agg(
         F.sum(
-            _dec(F.col("j")) * (F.col("n") * F.col("r_j") - F.col("n_j") * F.col("r"))
+            dec38(F.col("j")) * (F.col("n") * F.col("r_j") - F.col("n_j") * F.col("r"))
         ).alias("tn")
     )
     m6 = F.lit(1_000_000).cast("decimal(38,0)")
@@ -351,10 +321,10 @@ def stats_cochran_armitage_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
             "j",
             F.col("n_j").cast("long").alias("n_orders"),
             F.col("r_j").cast("long").alias("n_pos"),
-            _halfup_div(m6 * F.col("r_j"), F.col("n_j")).cast("long").alias("p_hat_micro"),
+            halfup_div(m6 * F.col("r_j"), F.col("n_j")).cast("long").alias("p_hat_micro"),
             F.when(
                 F.col("var_s") > 0,
-                _halfup_div(m6 * F.col("tn") * F.col("tn") * F.col("n"), F.col("var_s"))
+                halfup_div(m6 * F.col("tn") * F.col("tn") * F.col("n"), F.col("var_s"))
                 * F.when(F.col("tn") < 0, F.lit(-1)).otherwise(F.lit(1)),
             )
             .cast("long")
@@ -372,7 +342,7 @@ SKIP_THRESHOLDS_CENTS = (10_000_00, 20_000_00, 30_000_00, 40_000_00, 50_000_00)
 
 
 def _skipping_oracle() -> str:
-    hd = _sql_halfup_div
+    hd = sql_halfup_div
     per_thr = " UNION ALL ".join(
         f"""
     SELECT {thr}::BIGINT AS thr_cents,
@@ -411,7 +381,7 @@ def _skipping_oracle() -> str:
     """
 
 
-@_queued("layout_minmax_skipping_audit", _skipping_oracle())
+@register("layout_minmax_skipping_audit", _skipping_oracle())
 def layout_minmax_skipping_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Read-side data-skipping effectiveness audit: partition orders by
     month (the natural ingest partitioning), collect the per-partition
@@ -440,11 +410,11 @@ def layout_minmax_skipping_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         cents.alias("c"),
     )
     parts = rows_.groupBy("part").agg(
-        _dec(F.count(F.lit(1))).alias("n_rows"),
+        dec38(F.count(F.lit(1))).alias("n_rows"),
         F.min("c").alias("min_c"),
         F.max("c").alias("max_c"),
         *[
-            _dec(F.sum(F.when(F.col("c") > thr, 1).otherwise(0))).alias(f"m_{i}")
+            dec38(F.sum(F.when(F.col("c") > thr, 1).otherwise(0))).alias(f"m_{i}")
             for i, thr in enumerate(SKIP_THRESHOLDS_CENTS)
         ],
     )
@@ -493,7 +463,7 @@ def layout_minmax_skipping_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "rows_matching",
         F.when(
             nonmatch > 0,
-            _halfup_div(m6 * _dec(F.col("rows_skipped")), _dec(nonmatch)),
+            halfup_div(m6 * dec38(F.col("rows_skipped")), dec38(nonmatch)),
         )
         .cast("long")
         .alias("skip_efficiency_micro"),
@@ -508,7 +478,7 @@ SESSION_GAPS_S = (300, 900, 1800, 3600, 7200)
 
 
 def _gap_sensitivity_oracle() -> str:
-    hd = _sql_halfup_div
+    hd = sql_halfup_div
     per_thr = " UNION ALL ".join(
         f"""
     SELECT {thr}::BIGINT AS gap_s,
@@ -539,7 +509,7 @@ def _gap_sensitivity_oracle() -> str:
     """
 
 
-@_queued("events_session_gap_sensitivity", _gap_sensitivity_oracle())
+@register("events_session_gap_sensitivity", _gap_sensitivity_oracle())
 def events_session_gap_sensitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-count sensitivity curve: for each candidate inactivity
     timeout (5m/15m/30m/1h/2h), the total session count (= users +
@@ -608,10 +578,10 @@ def events_session_gap_sensitivity(spark: SparkSession, sf_dir: str) -> DataFram
         "n_users",
         "n_events",
         "n_sessions",
-        _halfup_div(m6 * _dec(F.col("n_sessions")), _dec(F.col("n_users")))
+        halfup_div(m6 * dec38(F.col("n_sessions")), dec38(F.col("n_users")))
         .cast("long")
         .alias("sessions_per_user_micro"),
-        _halfup_div(m6 * _dec(F.col("n_events")), _dec(F.col("n_sessions")))
+        halfup_div(m6 * dec38(F.col("n_events")), dec38(F.col("n_sessions")))
         .cast("long")
         .alias("events_per_session_micro"),
     ).orderBy("gap_s")

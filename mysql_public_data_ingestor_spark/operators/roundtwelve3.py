@@ -1,12 +1,8 @@
-"""Round-12 banked operator queue, batch H — built AND gated in round
-11 (same-commit rule: ``tests/test_roundtwelve3.py`` carries raw-frame
-oracle parity, plan bars and Python replicas with float anchors;
-SCALE.md §5j.9 records the ×10 ladder from this round's session).
+"""Round-12 operator batch H.
 
-NOT imported by ``registry._ensure_loaded`` yet — the round-11 window
-is exactly full at 50 unverified names. ``activate()`` is the round-12
-switch (flip together with ``roundtwelve.activate()`` /
-``roundtwelve2.activate()``).
+Gates: raw-frame oracle parity, plan bars and Python replicas with
+float anchors in ``tests/test_roundtwelve3.py``; SCALE.md §5j.9
+records the ×10 ladder.
 
 Batch theme — post-hoc tests, provenance, graph structure curves and
 DP budget planning: the Dunn nonparametric post-hoc pairwise test
@@ -26,34 +22,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.exact import dec38, halfup_div, sql_halfup_div
+from ..registry import register
 from ..tables import Tables
-from .roundeleven import _dec, _halfup_div, _sql_halfup_div
-
-QUEUE: list[tuple] = []
-
-
-def _queued(name: str, oracle: str):
-    def deco(fn):
-        QUEUE.append((name, fn, oracle, fn.__doc__ or ""))
-        return fn
-
-    return deco
-
-
-_ACTIVATED = False
-
-
-def activate() -> None:
-    """Register every queued query (round-12 switch; idempotent)."""
-    global _ACTIVATED
-    if _ACTIVATED:
-        return
-    from ..registry import register
-
-    for name, fn, oracle, doc in QUEUE:
-        register(name, oracle=oracle, doc=doc)(fn)
-    _ACTIVATED = True
-
 
 # ---------------------------------------------------------------------------
 # 1. Dunn nonparametric post-hoc pairwise test (return-flag groups)
@@ -111,7 +82,7 @@ _SQL_DUNN_Z2 = """CAST(floor(
 
 
 def _dunn_oracle() -> str:
-    hd = _sql_halfup_div
+    hd = sql_halfup_div
     return f"""
     WITH {_DUNN_PAIR_CTES}
     SELECT g_i, g_j, CAST(n_i AS BIGINT) AS n_i, CAST(n_j AS BIGINT) AS n_j,
@@ -144,15 +115,15 @@ def _dunn_pairs(t: Tables) -> DataFrame:
         gv.join(F.broadcast(r), "v")
         .groupBy("g")
         .agg(
-            _dec(F.sum("cnt_g")).alias("n_g"),
+            dec38(F.sum("cnt_g")).alias("n_g"),
             F.sum(
-                _dec(F.col("cnt_g")) * (2 * F.col("cum") + F.col("cnt") + 1)
+                dec38(F.col("cnt_g")) * (2 * F.col("cum") + F.col("cnt") + 1)
             ).alias("r2_g"),
         )
     )
     tie3 = dv.agg(
         F.sum(
-            _dec(F.col("cnt")) * F.col("cnt") * F.col("cnt") - _dec(F.col("cnt"))
+            dec38(F.col("cnt")) * F.col("cnt") * F.col("cnt") - dec38(F.col("cnt"))
         ).alias("tie3")
     )
     cn = (
@@ -200,7 +171,7 @@ def _dunn_z2_unsigned():
     ).cast("long")
 
 
-@_queued("stats_dunn_posthoc_quantity", _dunn_oracle())
+@register("stats_dunn_posthoc_quantity", _dunn_oracle())
 def stats_dunn_posthoc_quantity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dunn post-hoc pairwise rank test behind
     ``stats_kruskal_wallis_quantity``: once KW rejects "all return-flag
@@ -243,7 +214,7 @@ def stats_dunn_posthoc_quantity(spark: SparkSession, sf_dir: str) -> DataFrame:
         "g_j",
         F.col("n_i").cast("long").alias("n_i"),
         F.col("n_j").cast("long").alias("n_j"),
-        _halfup_div(m6 * F.col("a_ij"), 2 * F.col("n_i") * F.col("n_j"))
+        halfup_div(m6 * F.col("a_ij"), 2 * F.col("n_i") * F.col("n_j"))
         .cast("long")
         .alias("rank_diff_micro"),
         (z2 * F.when(F.col("a_ij") < 0, F.lit(-1)).otherwise(F.lit(1)))
@@ -258,7 +229,7 @@ def stats_dunn_posthoc_quantity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _cross_source_oracle() -> str:
-    hd = _sql_halfup_div
+    hd = sql_halfup_div
     return f"""
     WITH hs AS (
       SELECT DISTINCT source, sha256(text) AS h FROM documents
@@ -288,7 +259,7 @@ def _cross_source_oracle() -> str:
     """
 
 
-@_queued("dedup_cross_source_matrix", _cross_source_oracle())
+@register("dedup_cross_source_matrix", _cross_source_oracle())
 def dedup_cross_source_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-source exact-duplicate contamination matrix: for every
     source pair, how many distinct document texts (by sha256) appear in
@@ -311,12 +282,12 @@ def dedup_cross_source_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     t = Tables(spark, sf_dir)
     hs = t.documents.select("source", F.sha2("text", 256).alias("h")).distinct()
-    per_s = hs.groupBy("source").agg(_dec(F.count(F.lit(1))).alias("n_hashes"))
+    per_s = hs.groupBy("source").agg(dec38(F.count(F.lit(1))).alias("n_hashes"))
     b = hs.select(F.col("source").alias("s_j"), F.col("h").alias("h_j"))
     shared = (
         hs.join(b, (F.col("h") == F.col("h_j")) & (F.col("source") < F.col("s_j")))
         .groupBy(F.col("source").alias("s_i"), "s_j")
-        .agg(_dec(F.count(F.lit(1))).alias("n_shared"))
+        .agg(dec38(F.count(F.lit(1))).alias("n_shared"))
     )
     pj = per_s.select(F.col("source").alias("s_j"), F.col("n_hashes").alias("d_j"))
     pairs = (
@@ -341,7 +312,7 @@ def dedup_cross_source_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("d_i").cast("long").alias("n_distinct_i"),
         F.col("d_j").cast("long").alias("n_distinct_j"),
         F.col("n_shared").cast("long").alias("n_shared"),
-        F.when(union > 0, _halfup_div(m6 * F.col("n_shared"), union))
+        F.when(union > 0, halfup_div(m6 * F.col("n_shared"), union))
         .cast("long")
         .alias("jaccard_micro"),
     ).orderBy("s_i", "s_j")
@@ -355,7 +326,7 @@ def dedup_cross_source_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _ck_oracle() -> str:
     from .graph import _SQL_TRI_CTES
 
-    hd = _sql_halfup_div
+    hd = sql_halfup_div
     return (
         _SQL_TRI_CTES
         + f"""
@@ -385,7 +356,7 @@ def _ck_oracle() -> str:
     )
 
 
-@_queued("graph_clustering_by_degree_curve", _ck_oracle())
+@register("graph_clustering_by_degree_curve", _ck_oracle())
 def graph_clustering_by_degree_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mean local clustering coefficient per log2 degree bucket, C(k)
     — the hierarchical-structure curve: a falling C(k) (clustering
@@ -436,9 +407,9 @@ def graph_clustering_by_degree_curve(spark: SparkSession, sf_dir: str) -> DataFr
             .cast("long")
             .alias("db"),
             "degree",
-            _halfup_div(
-                m2 * _dec(F.coalesce(F.col("n_tri"), F.lit(0))),
-                _dec(F.col("degree")) * (F.col("degree") - 1),
+            halfup_div(
+                m2 * dec38(F.coalesce(F.col("n_tri"), F.lit(0))),
+                dec38(F.col("degree")) * (F.col("degree") - 1),
             ).alias("c_micro"),
         )
     )
@@ -448,7 +419,7 @@ def graph_clustering_by_degree_curve(spark: SparkSession, sf_dir: str) -> DataFr
             F.min("degree").cast("long").alias("min_degree"),
             F.max("degree").cast("long").alias("max_degree"),
             F.count(F.lit(1)).cast("long").alias("n_nodes"),
-            _halfup_div(F.sum("c_micro"), _dec(F.count(F.lit(1))))
+            halfup_div(F.sum("c_micro"), dec38(F.count(F.lit(1))))
             .cast("long")
             .alias("mean_clustering_micro"),
         )
@@ -464,7 +435,7 @@ DP_EPS_MICRO = (100_000, 500_000, 1_000_000, 2_000_000, 5_000_000)
 
 
 def _dp_utility_oracle() -> str:
-    hd = _sql_halfup_div
+    hd = sql_halfup_div
     per_eps = " UNION ALL ".join(
         f"""
     SELECT {e}::BIGINT AS eps_micro,
@@ -490,7 +461,7 @@ def _dp_utility_oracle() -> str:
     """
 
 
-@_queued("privacy_dp_budget_utility_curve", _dp_utility_oracle())
+@register("privacy_dp_budget_utility_curve", _dp_utility_oracle())
 def privacy_dp_budget_utility_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Differential-privacy budget planning curve: for each epsilon in
     the standard ladder (0.1 / 0.5 / 1 / 2 / 5), the EXPECTED absolute
@@ -513,7 +484,7 @@ def privacy_dp_budget_utility_curve(spark: SparkSession, sf_dir: str) -> DataFra
     is scalar algebra per level.
     """
     t = Tables(spark, sf_dir)
-    cells = t.events.groupBy("event_type").agg(_dec(F.count(F.lit(1))).alias("c"))
+    cells = t.events.groupBy("event_type").agg(dec38(F.count(F.lit(1))).alias("c"))
     t12 = F.lit(10**12).cast("decimal(38,0)")
     t18 = F.lit(10**18).cast("decimal(38,0)")
     agg = cells.agg(
@@ -547,11 +518,11 @@ def privacy_dp_budget_utility_curve(spark: SparkSession, sf_dir: str) -> DataFra
         "eps_micro",
         "n_cells",
         "min_count",
-        _halfup_div(t12, _dec(F.col("eps_micro")))
+        halfup_div(t12, dec38(F.col("eps_micro")))
         .cast("long")
         .alias("expected_abs_noise_micro"),
         "cells_drowned",
-        _halfup_div(t18, _dec(F.col("eps_micro")) * _dec(F.col("min_count")))
+        halfup_div(t18, dec38(F.col("eps_micro")) * dec38(F.col("min_count")))
         .cast("long")
         .alias("worst_rel_err_micro"),
     ).orderBy("eps_micro")
@@ -566,7 +537,7 @@ EIGEN_TOPK = 5
 
 
 def _eigen_oracle() -> str:
-    hd = _sql_halfup_div
+    hd = sql_halfup_div
     steps = []
     prev_v = "v0"
     for t in range(1, POWER_ITERS + 1):
@@ -628,7 +599,7 @@ def _eigen_oracle() -> str:
     """
 
 
-@_queued("embedding_cov_top_eigen_power", _eigen_oracle())
+@register("embedding_cov_top_eigen_power", _eigen_oracle())
 def embedding_cov_top_eigen_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top covariance eigenpair of the embedding corpus via
     DISTRIBUTED POWER ITERATION — the first PCA step every embedding-
@@ -687,13 +658,13 @@ def embedding_cov_top_eigen_power(spark: SparkSession, sf_dir: str) -> DataFrame
     nn = ex.agg(F.countDistinct("vec_id").cast("decimal(38,0)").alias("n"))
     means = (
         ex.groupBy("i")
-        .agg(F.sum(_dec(F.col("xq"))).alias("sx"))
+        .agg(F.sum(dec38(F.col("xq"))).alias("sx"))
         .crossJoin(F.broadcast(nn))
-        .select("i", _halfup_div(F.col("sx"), F.col("n")).alias("m"))
+        .select("i", halfup_div(F.col("sx"), F.col("n")).alias("m"))
     )
     cx = (
         ex.join(F.broadcast(means), "i")
-        .select("vec_id", "i", (_dec(F.col("xq")) - F.col("m")).alias("c"))
+        .select("vec_id", "i", (dec38(F.col("xq")) - F.col("m")).alias("c"))
         # EAGER: all 6 iterations re-read this table; a lazy checkpoint
         # would leave 6 nested copies of the scan in one analyzed plan
         .localCheckpoint(eager=True)
@@ -715,7 +686,7 @@ def embedding_cov_top_eigen_power(spark: SparkSession, sf_dir: str) -> DataFrame
         mx = w.agg(F.max(F.abs(F.col("w"))).alias("m"))
         v_prev = v
         v = w.crossJoin(F.broadcast(mx)).select(
-            "i", _halfup_div(m6 * F.col("w"), F.col("m")).alias("v")
+            "i", halfup_div(m6 * F.col("w"), F.col("m")).alias("v")
         )
         # EAGER: cut the lineage each BSP step (the PageRank convention) —
         # chained lazy plans grow superlinearly in analysis time
@@ -737,7 +708,7 @@ def embedding_cov_top_eigen_power(spark: SparkSession, sf_dir: str) -> DataFrame
         )
         .agg(F.max(F.abs(F.col("v") - F.col("vp"))).cast("long").alias("d"))
     )
-    lam = _halfup_div(F.col("num"), m6 * F.col("den") * F.col("n"))
+    lam = halfup_div(F.col("num"), m6 * F.col("den") * F.col("n"))
     return (
         v.crossJoin(F.broadcast(ray))
         .crossJoin(F.broadcast(delta))

@@ -1,12 +1,8 @@
-"""Round-12 banked operator queue, batch I — built AND gated in round
-11 (same-commit rule: ``tests/test_roundtwelve4.py`` carries raw-frame
-oracle parity, plan bars and Python replicas with float anchors;
-SCALE.md §5j.10 records the ×10 ladder from this round's session).
+"""Round-12 operator batch I.
 
-NOT imported by ``registry._ensure_loaded`` yet — the round-11 window
-is exactly full at 50 unverified names. ``activate()`` is the round-12
-switch (flip together with the other ``roundtwelve*`` queues; the bank
-now totals 20 ops).
+Gates: raw-frame oracle parity, plan bars and Python replicas with
+float anchors in ``tests/test_roundtwelve4.py``; SCALE.md §5j.10
+records the ×10 ladder.
 
 Batch theme — shrinkage, serial-correlation-corrected trend, mixture
 drift and threshold governance: empirical-Bayes beta-binomial
@@ -29,34 +25,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.exact import dec38, halfup_div, sql_halfup_div
+from ..registry import register
 from ..tables import Tables
-from .roundeleven import _dec, _halfup_div, _sql_halfup_div
-
-QUEUE: list[tuple] = []
-
-
-def _queued(name: str, oracle: str):
-    def deco(fn):
-        QUEUE.append((name, fn, oracle, fn.__doc__ or ""))
-        return fn
-
-    return deco
-
-
-_ACTIVATED = False
-
-
-def activate() -> None:
-    """Register every queued query (round-12 switch; idempotent)."""
-    global _ACTIVATED
-    if _ACTIVATED:
-        return
-    from ..registry import register
-
-    for name, fn, oracle, doc in QUEUE:
-        register(name, oracle=oracle, doc=doc)(fn)
-    _ACTIVATED = True
-
 
 # ---------------------------------------------------------------------------
 # 1. Empirical-Bayes beta-binomial shrinkage of per-nation rates
@@ -64,7 +35,7 @@ def activate() -> None:
 
 
 def _eb_oracle() -> str:
-    hd = _sql_halfup_div
+    hd = sql_halfup_div
     return f"""
     WITH rates AS (
       SELECT n.n_name AS nation,
@@ -125,7 +96,7 @@ def _eb_oracle() -> str:
     """
 
 
-@_queued("stats_eb_beta_binomial_shrinkage", _eb_oracle())
+@register("stats_eb_beta_binomial_shrinkage", _eb_oracle())
 def stats_eb_beta_binomial_shrinkage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Empirical-Bayes shrinkage of per-nation order-completion rates:
     method-of-moments beta-binomial prior (strength M = p(1-p)/tau^2
@@ -161,8 +132,8 @@ def stats_eb_beta_binomial_shrinkage(spark: SparkSession, sf_dir: str) -> DataFr
         )
         .groupBy(F.col("n_name").alias("nation"))
         .agg(
-            _dec(F.count(F.lit(1))).alias("n_orders"),
-            _dec(
+            dec38(F.count(F.lit(1))).alias("n_orders"),
+            dec38(
                 F.sum(F.when(F.col("o_orderstatus") == "F", 1).otherwise(0))
             ).alias("k_pos"),
         )
@@ -173,17 +144,17 @@ def stats_eb_beta_binomial_shrinkage(spark: SparkSession, sf_dir: str) -> DataFr
         "nation",
         "n_orders",
         "k_pos",
-        _halfup_div(m6 * F.col("k_pos"), F.col("n_orders")).alias("p_micro"),
-        _halfup_div(g9, F.col("n_orders")).alias("inv_nano"),
+        halfup_div(m6 * F.col("k_pos"), F.col("n_orders")).alias("p_micro"),
+        halfup_div(g9, F.col("n_orders")).alias("inv_nano"),
     )
     gstats = pm.agg(
-        _dec(F.count(F.lit(1))).alias("g"),
+        dec38(F.count(F.lit(1))).alias("g"),
         F.sum("p_micro").alias("sp"),
         F.sum("inv_nano").alias("s_inv_nano"),
     ).select(
         "g",
         "s_inv_nano",
-        _halfup_div(F.col("sp"), F.col("g")).alias("pbar_micro"),
+        halfup_div(F.col("sp"), F.col("g")).alias("pbar_micro"),
     )
     s2 = (
         pm.crossJoin(F.broadcast(gstats))
@@ -199,15 +170,15 @@ def stats_eb_beta_binomial_shrinkage(spark: SparkSession, sf_dir: str) -> DataFr
         .select(
             "g",
             "pbar_micro",
-            _halfup_div(F.col("sdev2"), F.col("g") - 1).alias("s2_pico"),
-            _halfup_div(F.col("s_inv_nano"), F.col("g")).alias("mean_inv_nano"),
+            halfup_div(F.col("sdev2"), F.col("g") - 1).alias("s2_pico"),
+            halfup_div(F.col("s_inv_nano"), F.col("g")).alias("mean_inv_nano"),
         )
     )
     mo = s2.select(
         "g",
         "pbar_micro",
         "s2_pico",
-        _halfup_div(
+        halfup_div(
             F.col("pbar_micro") * (m6 - F.col("pbar_micro")) * F.col("mean_inv_nano"),
             g9,
         ).alias("vw_pico"),
@@ -218,7 +189,7 @@ def stats_eb_beta_binomial_shrinkage(spark: SparkSession, sf_dir: str) -> DataFr
         F.when(
             F.col("s2_pico") - F.col("vw_pico") > 0,
             F.greatest(
-                _halfup_div(
+                halfup_div(
                     k3 * F.col("pbar_micro") * (m6 - F.col("pbar_micro")),
                     F.col("s2_pico") - F.col("vw_pico"),
                 )
@@ -229,13 +200,13 @@ def stats_eb_beta_binomial_shrinkage(spark: SparkSession, sf_dir: str) -> DataFr
     )
     out = pm.crossJoin(F.broadcast(mm))
     shrunk = F.when(F.col("m_milli").isNull(), F.col("pbar_micro")).otherwise(
-        _halfup_div(
+        halfup_div(
             g9 * F.col("k_pos") + F.col("m_milli") * F.col("pbar_micro"),
             k3 * F.col("n_orders") + F.col("m_milli"),
         )
     )
     weight = F.when(F.col("m_milli").isNull(), F.lit(1000)).otherwise(
-        _halfup_div(k3 * F.col("m_milli"), k3 * F.col("n_orders") + F.col("m_milli"))
+        halfup_div(k3 * F.col("m_milli"), k3 * F.col("n_orders") + F.col("m_milli"))
     )
     return out.select(
         "nation",
@@ -256,7 +227,7 @@ CO_RES_SCALE = 100  # centi residuals, the Breusch-Pagan convention
 
 
 def _co_oracle() -> str:
-    hd = _sql_halfup_div
+    hd = sql_halfup_div
     return f"""
     WITH daily AS (
       SELECT CAST(o_orderdate AS DATE) AS day, CAST(count(*) AS HUGEINT) AS y
@@ -310,7 +281,7 @@ def _co_oracle() -> str:
     """
 
 
-@_queued("stats_cochrane_orcutt_trend", _co_oracle())
+@register("stats_cochrane_orcutt_trend", _co_oracle())
 def stats_cochrane_orcutt_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cochrane–Orcutt AR(1)-corrected trend estimate on the daily
     order-count series: estimate rho from the lag-1 autocorrelation of
@@ -334,16 +305,16 @@ def stats_cochrane_orcutt_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     t = Tables(spark, sf_dir)
     daily = t.orders.groupBy(F.to_date("o_orderdate").alias("day")).agg(
-        _dec(F.count(F.lit(1))).alias("y")
+        dec38(F.count(F.lit(1))).alias("y")
     )
     b0 = daily.select(F.col("day").alias("day_b"))
     idx = (
         daily.join(F.broadcast(b0), F.col("day_b") <= F.col("day"))
         .groupBy("day", "y")
-        .agg(_dec(F.count(F.lit(1))).alias("k"))
+        .agg(dec38(F.count(F.lit(1))).alias("k"))
     )
     s1 = idx.agg(
-        _dec(F.count(F.lit(1))).alias("n"),
+        dec38(F.count(F.lit(1))).alias("n"),
         F.sum("k").alias("sk"),
         F.sum(F.col("k") * F.col("k")).alias("skk"),
         F.sum("y").alias("sy"),
@@ -365,7 +336,7 @@ def stats_cochrane_orcutt_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     resid = idx.crossJoin(F.broadcast(coef)).select(
         "k",
         "y",
-        _halfup_div(
+        halfup_div(
             F.lit(CO_RES_SCALE).cast("decimal(38,0)") * rnum, F.col("n") * F.col("d")
         ).alias("u"),
     )
@@ -377,7 +348,7 @@ def stats_cochrane_orcutt_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
         paired.agg(F.sum(F.col("u") * F.col("up")).alias("num"))
         .crossJoin(F.broadcast(resid.agg(F.sum(F.col("u") * F.col("u")).alias("den"))))
         .select(
-            _halfup_div(
+            halfup_div(
                 F.lit(1_000_000).cast("decimal(38,0)") * F.col("num"), F.col("den")
             ).alias("rho_micro")
         )
@@ -388,7 +359,7 @@ def stats_cochrane_orcutt_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
         (m6 * F.col("k") - F.col("rho_micro") * (F.col("k") - 1)).alias("xs"),
     )
     s2 = trans.agg(
-        _dec(F.count(F.lit(1))).alias("m"),
+        dec38(F.count(F.lit(1))).alias("m"),
         F.sum("xs").alias("sx"),
         F.sum(F.col("xs") * F.col("xs")).alias("sxx"),
         F.sum("ys").alias("syt"),
@@ -400,8 +371,8 @@ def stats_cochrane_orcutt_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.col("n").cast("long").alias("n_days"),
             F.col("rho_micro").cast("long").alias("rho_micro"),
-            _halfup_div(m6 * F.col("b"), F.col("d")).cast("long").alias("ols_slope_micro"),
-            _halfup_div(
+            halfup_div(m6 * F.col("b"), F.col("d")).cast("long").alias("ols_slope_micro"),
+            halfup_div(
                 m6 * (F.col("m") * F.col("sxy") - F.col("sx") * F.col("syt")),
                 F.col("m") * F.col("sxx") - F.col("sx") * F.col("sx"),
             )
@@ -419,7 +390,7 @@ DRIFT_DECILES = 10
 
 
 def _drift_oracle() -> str:
-    hd = _sql_halfup_div
+    hd = sql_halfup_div
     return f"""
     WITH dd AS (
       SELECT (('0x' || substr(sha256(CAST(doc_id AS VARCHAR)), 1, 15)))::BIGINT
@@ -463,7 +434,7 @@ def _drift_oracle() -> str:
     """
 
 
-@_queued("corpus_source_mixture_drift", _drift_oracle())
+@register("corpus_source_mixture_drift", _drift_oracle())
 def corpus_source_mixture_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Source-mixture drift across the 10 deterministic ingestion
     deciles (the sha256(doc_id) pseudo-order every corpus sampler
@@ -492,7 +463,7 @@ def corpus_source_mixture_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     t = Tables(spark, sf_dir)
     d = (sha256_prefix_i64(F.col("doc_id").cast("string")) % DRIFT_DECILES).alias("d")
-    cells = t.documents.groupBy(d, "source").agg(_dec(F.count(F.lit(1))).alias("c"))
+    cells = t.documents.groupBy(d, "source").agg(dec38(F.count(F.lit(1))).alias("c"))
     per_d = cells.groupBy("d").agg(F.sum("c").alias("n_d"))
     mx = cells.groupBy("d").agg(F.max("c").alias("mc"))
     tops = (
@@ -527,7 +498,7 @@ def corpus_source_mixture_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(
             "d",
-            _halfup_div(
+            halfup_div(
                 F.lit(1_000_000).cast("decimal(38,0)") * F.col("num"),
                 2 * F.col("nc") * F.col("np"),
             ).alias("tvd_prev_micro"),
@@ -541,7 +512,7 @@ def corpus_source_mixture_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             "d",
             F.col("n_d").cast("long").alias("n_docs"),
             "top_source",
-            _halfup_div(m6 * F.col("mc"), F.col("n_d")).cast("long").alias(
+            halfup_div(m6 * F.col("mc"), F.col("n_d")).cast("long").alias(
                 "top_share_micro"
             ),
             F.col("tvd_prev_micro").cast("long").alias("tvd_prev_micro"),
@@ -558,7 +529,7 @@ def corpus_source_mixture_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _transfer_oracle() -> str:
     from .ml import _scored_labeled_sql
 
-    hd = _sql_halfup_div
+    hd = sql_halfup_div
     return (
         _scored_labeled_sql()
         + f"""
@@ -626,7 +597,7 @@ def _transfer_oracle() -> str:
     )
 
 
-@_queued("ml_threshold_transfer_audit", _transfer_oracle())
+@register("ml_threshold_transfer_audit", _transfer_oracle())
 def ml_threshold_transfer_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Threshold-transfer audit: pick the Youden-optimal classifier
     threshold on a deterministic half of the corpus, apply it to the
@@ -663,8 +634,8 @@ def ml_threshold_transfer_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     grid = (
         sc.groupBy("fold", "score_q")
         .agg(
-            _dec(F.sum(F.when(F.col("label") == 0, 1).otherwise(0))).alias("c0"),
-            _dec(F.sum("label")).alias("c1"),
+            dec38(F.sum(F.when(F.col("label") == 0, 1).otherwise(0))).alias("c0"),
+            dec38(F.sum("label")).alias("c1"),
         )
         .localCheckpoint(eager=False)
     )
@@ -754,9 +725,9 @@ def ml_threshold_transfer_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     m6 = F.lit(1_000_000).cast("decimal(38,0)")
-    jt = _halfup_div(m6 * F.col("ja"), F.col("a0") * F.col("a1"))
-    jo = _halfup_div(m6 * F.col("jb_opt"), F.col("b0") * F.col("b1"))
-    jx = _halfup_div(m6 * F.col("jb_at_a"), F.col("b0") * F.col("b1"))
+    jt = halfup_div(m6 * F.col("ja"), F.col("a0") * F.col("a1"))
+    jo = halfup_div(m6 * F.col("jb_opt"), F.col("b0") * F.col("b1"))
+    jx = halfup_div(m6 * F.col("jb_at_a"), F.col("b0") * F.col("b1"))
     return (
         cross_.crossJoin(F.broadcast(bfold))
         .select(

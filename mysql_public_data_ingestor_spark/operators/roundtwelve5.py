@@ -1,11 +1,8 @@
-"""Round-12 banked operator queue, batch J — built AND gated in round
-11 (same-commit rule: ``tests/test_roundtwelve5.py`` carries raw-frame
-oracle parity, plan bars and Python replicas with float anchors;
-SCALE.md §5j.11 records the ×10 ladder from this round's session).
+"""Round-12 operator batch J.
 
-NOT imported by ``registry._ensure_loaded`` yet — the round-11 window
-is exactly full at 50 unverified names. ``activate()`` is the round-12
-switch (flip with the other ``roundtwelve*`` queues; bank total 23).
+Gates: raw-frame oracle parity, plan bars and Python replicas with
+float anchors in ``tests/test_roundtwelve5.py``; SCALE.md §5j.11
+records the ×10 ladder.
 
 Batch theme — stationarity, privacy adversary baselines, and
 categorical drift: the KPSS test in both level- and trend-stationarity
@@ -28,34 +25,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.exact import dec38, halfup_div, sql_halfup_div
+from ..registry import register
 from ..tables import Tables
-from .roundeleven import _dec, _halfup_div, _sql_halfup_div
-
-QUEUE: list[tuple] = []
-
-
-def _queued(name: str, oracle: str):
-    def deco(fn):
-        QUEUE.append((name, fn, oracle, fn.__doc__ or ""))
-        return fn
-
-    return deco
-
-
-_ACTIVATED = False
-
-
-def activate() -> None:
-    """Register every queued query (round-12 switch; idempotent)."""
-    global _ACTIVATED
-    if _ACTIVATED:
-        return
-    from ..registry import register
-
-    for name, fn, oracle, doc in QUEUE:
-        register(name, oracle=oracle, doc=doc)(fn)
-    _ACTIVATED = True
-
 
 # ---------------------------------------------------------------------------
 # 1. KPSS stationarity test (level and trend forms) on daily counts
@@ -67,7 +39,7 @@ KPSS_RES_SCALE = 100   # centi residuals for the trend form (BP convention)
 
 def _kpss_oracle() -> str:
     q = KPSS_LAGS
-    hd = _sql_halfup_div
+    hd = sql_halfup_div
     # Bartlett weights scaled by (q+1): (q+1) * gamma0 + 2 * sum (q+1-l) gamma_l
     lag_terms_lvl = " + ".join(
         f"2 * {q + 1 - l} * (SELECT CAST(sum(a.e * b.e) AS HUGEINT) "
@@ -142,7 +114,7 @@ def _kpss_tbl(t: Tables) -> DataFrame:
     e = n*y - S (scaled demeaned level), sp = n*P_k - k*S (scaled level
     prefix sums), u = centi-quantized OLS-detrended residual — all
     decimal(38,0), exact parquet round-trip. One ~2.4k-row table feeds
-    every branch of the statistic (guide §2.4; VERDICT r15 item 1)."""
+    every branch of the statistic (guide §2.4; VERDICT r14 item 1)."""
     from ..warehouse import ensure_table, fixture_tag
 
     tag = fixture_tag(t.spark, t.sf_dir, ("orders.parquet",))
@@ -159,16 +131,16 @@ def _kpss_tbl_build(t: Tables) -> DataFrame:
     rank index in one crossJoin of the shared 1-row sufficient-sum
     frame (value-identical: same expressions over the same scalars)."""
     daily = t.orders.groupBy(F.to_date("o_orderdate").alias("day")).agg(
-        _dec(F.count(F.lit(1))).alias("y")
+        dec38(F.count(F.lit(1))).alias("y")
     )
     b0 = daily.select(F.col("day").alias("day_b"), F.col("y").alias("yb"))
     idx = (
         daily.join(F.broadcast(b0), F.col("day_b") <= F.col("day"))
         .groupBy("day", "y")
-        .agg(_dec(F.count(F.lit(1))).alias("k"), F.sum("yb").alias("p"))
+        .agg(dec38(F.count(F.lit(1))).alias("k"), F.sum("yb").alias("p"))
     )
     tot = idx.agg(
-        _dec(F.count(F.lit(1))).alias("n"),
+        dec38(F.count(F.lit(1))).alias("n"),
         F.sum("y").alias("s"),
         F.sum("k").alias("sk"),
         F.sum(F.col("k") * F.col("k")).alias("skk"),
@@ -192,14 +164,14 @@ def _kpss_tbl_build(t: Tables) -> DataFrame:
         "y",
         (F.col("n") * F.col("y") - F.col("s")).alias("e"),
         (F.col("n") * F.col("p") - F.col("k") * F.col("s")).alias("sp"),
-        _halfup_div(
+        halfup_div(
             F.lit(KPSS_RES_SCALE).cast("decimal(38,0)") * rnum,
             F.col("n") * F.col("d"),
         ).alias("u"),
     )
 
 
-@_queued("stats_kpss_level_trend_daily", _kpss_oracle())
+@register("stats_kpss_level_trend_daily", _kpss_oracle())
 def stats_kpss_level_trend_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """KPSS stationarity test on the daily order-count series, both
     forms: level-stationarity (partial sums of the demeaned series)
@@ -272,7 +244,7 @@ def stats_kpss_level_trend_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     m6 = F.lit(1_000_000).cast("decimal(38,0)")
     qq = F.lit(q + 1).cast("decimal(38,0)")
     return (
-        tbl.agg(_dec(F.count(F.lit(1))).alias("n"))
+        tbl.agg(dec38(F.count(F.lit(1))).alias("n"))
         .crossJoin(F.broadcast(lvl_ss2.select(F.col("ss2").alias("l_ss2"))))
         .crossJoin(F.broadcast(lvl_v.select(F.col("v").alias("l_v"))))
         .crossJoin(F.broadcast(tr_ss2.select(F.col("ss2").alias("t_ss2"))))
@@ -281,13 +253,13 @@ def stats_kpss_level_trend_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n").cast("long").alias("n_days"),
             F.when(
                 F.col("l_v") > 0,
-                _halfup_div(m6 * qq * F.col("l_ss2"), F.col("n") * F.col("l_v")),
+                halfup_div(m6 * qq * F.col("l_ss2"), F.col("n") * F.col("l_v")),
             )
             .cast("long")
             .alias("kpss_level_micro"),
             F.when(
                 F.col("t_v") > 0,
-                _halfup_div(m6 * qq * F.col("t_ss2"), F.col("n") * F.col("t_v")),
+                halfup_div(m6 * qq * F.col("t_ss2"), F.col("n") * F.col("t_v")),
             )
             .cast("long")
             .alias("kpss_trend_micro"),
@@ -301,7 +273,7 @@ def stats_kpss_level_trend_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _attr_inference_oracle() -> str:
-    hd = _sql_halfup_div
+    hd = sql_halfup_div
     return f"""
     WITH qi AS (
       SELECT c_nationkey AS nat,
@@ -339,7 +311,7 @@ def _attr_inference_oracle() -> str:
     """
 
 
-@_queued("privacy_attribute_inference_baseline", _attr_inference_oracle())
+@register("privacy_attribute_inference_baseline", _attr_inference_oracle())
 def privacy_attribute_inference_baseline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Attribute-inference baseline: an adversary who knows each
     customer's quasi-identifiers (nation, account-balance band) and
@@ -370,7 +342,7 @@ def privacy_attribute_inference_baseline(spark: SparkSession, sf_dir: str) -> Da
         F.col("c_nationkey").alias("nat"),
         F.floor(F.col("c_acctbal") / 1000).cast("long").alias("bal_band"),
         F.col("c_mktsegment").alias("sens"),
-    ).agg(_dec(F.count(F.lit(1))).alias("c"))
+    ).agg(dec38(F.count(F.lit(1))).alias("c"))
     per_cell = cells.groupBy("nat", "bal_band").agg(
         F.sum("c").alias("n_cell"), F.max("c").alias("maj")
     )
@@ -386,15 +358,15 @@ def privacy_attribute_inference_baseline(spark: SparkSession, sf_dir: str) -> Da
     return glob.crossJoin(F.broadcast(marg)).select(
         "n_cells",
         F.col("n").cast("long").alias("n_records"),
-        _halfup_div(m6 * F.col("hits"), F.col("n")).cast("long").alias(
+        halfup_div(m6 * F.col("hits"), F.col("n")).cast("long").alias(
             "attacker_acc_micro"
         ),
-        _halfup_div(m6 * F.col("gmaj"), F.col("n")).cast("long").alias(
+        halfup_div(m6 * F.col("gmaj"), F.col("n")).cast("long").alias(
             "marginal_acc_micro"
         ),
         F.when(
             F.col("n") > F.col("gmaj"),
-            _halfup_div(
+            halfup_div(
                 m6 * (F.col("hits") - F.col("gmaj")), F.col("n") - F.col("gmaj")
             ).cast("long"),
         ).alias("inference_lift_micro"),
@@ -407,7 +379,7 @@ def privacy_attribute_inference_baseline(spark: SparkSession, sf_dir: str) -> Da
 
 
 def _cat_drift_oracle() -> str:
-    hd = _sql_halfup_div
+    hd = sql_halfup_div
     parts = []
     for col_name, table, col, half_expr in (
         ("events.event_type", "events", "event_type",
@@ -447,7 +419,7 @@ def _cat_drift_oracle() -> str:
     """
 
 
-@_queued("dq_category_drift_halves", _cat_drift_oracle())
+@register("dq_category_drift_halves", _cat_drift_oracle())
 def dq_category_drift_halves(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Categorical value-drift audit between the first and second half
     of each table's natural order (event time, document id, order
@@ -521,7 +493,7 @@ def dq_category_drift_halves(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_vanished",
         F.when(
             total > 0,
-            _halfup_div(m6 * _dec(inter_union_num), _dec(union_den)),
+            halfup_div(m6 * dec38(inter_union_num), dec38(union_den)),
         )
         .cast("long")
         .alias("jaccard_micro"),

@@ -31,9 +31,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.exact import dec38, halfup_div, sql_halfup_div
 from ..registry import register
 from ..tables import Tables
-from .roundeleven import _dec, _halfup_div, _sql_halfup_div
 
 # ---------------------------------------------------------------------------
 # 1. Holm–Bonferroni step-down over the Dunn pairwise family
@@ -184,7 +184,7 @@ def _gk_cells_sql() -> str:
 
 
 def _gk_oracle() -> str:
-    hd = _sql_halfup_div
+    hd = sql_halfup_div
     return f"""
     WITH {_gk_cells_sql()}, cd AS (
       SELECT CAST(sum(CASE WHEN b.x > a.x AND b.y > a.y THEN a.n * b.n
@@ -228,7 +228,7 @@ def stats_goodman_kruskal_gamma(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells = t.orders.select(
         F.substring("o_orderpriority", 1, 1).cast("long").alias("x"),
         F.floor(F.col("o_totalprice") / float(GK_PRICE_BAND)).cast("long").alias("y"),
-    ).groupBy("x", "y").agg(_dec(F.count(F.lit(1))).alias("n"))
+    ).groupBy("x", "y").agg(dec38(F.count(F.lit(1))).alias("n"))
     b = cells.select(
         F.col("x").alias("bx"), F.col("y").alias("by"), F.col("n").alias("bn")
     )
@@ -254,7 +254,7 @@ def stats_goodman_kruskal_gamma(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("d_pairs").cast("long").alias("d_pairs"),
         F.when(
             F.col("c_pairs") + F.col("d_pairs") > 0,
-            _halfup_div(
+            halfup_div(
                 m6 * (F.col("c_pairs") - F.col("d_pairs")),
                 F.col("c_pairs") + F.col("d_pairs"),
             ).cast("long"),
@@ -268,7 +268,7 @@ def stats_goodman_kruskal_gamma(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _somers_oracle() -> str:
-    hd = _sql_halfup_div
+    hd = sql_halfup_div
     return f"""
     WITH lab AS (
       SELECT CAST(substr(o_orderpriority, 1, 1) AS BIGINT) AS x,
@@ -328,7 +328,7 @@ def stats_somers_d_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells = t.orders.select(
         F.substring("o_orderpriority", 1, 1).cast("long").alias("x"),
         F.when(F.col("o_orderstatus") == "F", 1).otherwise(0).alias("y"),
-    ).groupBy("x", "y").agg(_dec(F.count(F.lit(1))).alias("n"))
+    ).groupBy("x", "y").agg(dec38(F.count(F.lit(1))).alias("n"))
     b = cells.select(
         F.col("x").alias("bx"), F.col("y").alias("by"), F.col("n").alias("bn")
     )
@@ -361,10 +361,10 @@ def stats_somers_d_status(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("d_pairs").cast("long").alias("d_pairs"),
         F.col("ties_x").cast("long").alias("ties_x"),
         F.col("ties_y").cast("long").alias("ties_y"),
-        F.when(den_yx > 0, _halfup_div(num, den_yx).cast("long")).alias(
+        F.when(den_yx > 0, halfup_div(num, den_yx).cast("long")).alias(
             "somers_d_yx_micro"
         ),
-        F.when(den_xy > 0, _halfup_div(num, den_xy).cast("long")).alias(
+        F.when(den_xy > 0, halfup_div(num, den_xy).cast("long")).alias(
             "somers_d_xy_micro"
         ),
     )
@@ -429,7 +429,7 @@ def _st_runsum_col(a, b, n):
 
 
 def _siegel_tukey_oracle() -> str:
-    hd = _sql_halfup_div
+    hd = sql_halfup_div
     runsum = _st_runsum_sql("cum + 1", "cum + cnt", "n")
     return f"""
     WITH q AS (
@@ -522,7 +522,7 @@ def stats_siegel_tukey_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("cnt").cast("long").alias("n"),
         F.sum("cnt_a").cast("long").alias("n_a"),
         F.sum(
-            _dec(F.col("cnt")) * F.col("cnt") * F.col("cnt") - _dec(F.col("cnt"))
+            dec38(F.col("cnt")) * F.col("cnt") * F.col("cnt") - dec38(F.col("cnt"))
         ).alias("tie3"),
     )
     w = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, -1)
@@ -538,7 +538,7 @@ def stats_siegel_tukey_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
     m6 = F.lit(1_000_000).cast("decimal(38,0)")
     wa = runs.agg(
         F.sum(
-            _halfup_div(m6 * F.col("cnt_a") * _dec(runsum), _dec(F.col("cnt")))
+            halfup_div(m6 * F.col("cnt_a") * dec38(runsum), dec38(F.col("cnt")))
         ).alias("w_a_micro")
     )
     stat = tot.crossJoin(F.broadcast(wa)).select(
@@ -547,7 +547,7 @@ def stats_siegel_tukey_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("n") - F.col("n_a")).alias("n_r"),
         "w_a_micro",
         (
-            _dec(F.col("n")) * (F.col("n") + 1) * (F.col("n") - 1) - F.col("tie3")
+            dec38(F.col("n")) * (F.col("n") + 1) * (F.col("n") - 1) - F.col("tie3")
         ).alias("cnum"),
     )
     dw = F.col("w_a_micro").cast("double") - F.col("n_a").cast("double") * (
@@ -564,7 +564,7 @@ def stats_siegel_tukey_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
         / F.col("cnum").cast("double")
         + F.lit(0.5)
     ).cast("long")
-    e_w = _dec(F.lit(500000)) * F.col("n_a") * (F.col("n") + 1)
+    e_w = dec38(F.lit(500000)) * F.col("n_a") * (F.col("n") + 1)
     return stat.select(
         F.col("n_a").cast("long").alias("n_a"),
         F.col("n_r").cast("long").alias("n_r"),
@@ -690,8 +690,8 @@ def stats_conover_squared_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
     # to the bounded grid before any join or window
     gv = q.groupBy("g", "v").agg(F.count(F.lit(1)).alias("cnt_gv"))
     gs = gv.groupBy("g").agg(
-        _dec(F.sum("cnt_gv")).alias("n_g"),
-        _dec(F.sum(F.col("v") * F.col("cnt_gv"))).alias("s_g"),
+        dec38(F.sum("cnt_gv")).alias("n_g"),
+        dec38(F.sum(F.col("v") * F.col("cnt_gv"))).alias("s_g"),
     )
     # exact integer product of the k<=3 group sizes: collect, sort (so
     # the fold order is deterministic), fold-multiply in decimal
@@ -712,8 +712,8 @@ def stats_conover_squared_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
             "g",
             "cnt_gv",
             (
-                F.abs(_dec(F.col("v")) * F.col("n_g") - F.col("s_g"))
-                * _halfup_div(F.col("p"), F.col("n_g"))
+                F.abs(dec38(F.col("v")) * F.col("n_g") - F.col("s_g"))
+                * halfup_div(F.col("p"), F.col("n_g"))
             ).alias("u"),
         )
     )
@@ -722,12 +722,12 @@ def stats_conover_squared_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
     r = du.select(
         "u", "cnt", F.coalesce(F.sum("cnt").over(w), F.lit(0)).alias("cum")
     )
-    r2 = _dec(2 * F.col("cum") + F.col("cnt") + 1)
+    r2 = dec38(2 * F.col("cum") + F.col("cnt") + 1)
     ranked = dev.join(F.broadcast(r), "u").select(
         "g", "cnt_gv", r2.alias("r2")
     )
     sums = ranked.groupBy("g").agg(
-        _dec(F.sum("cnt_gv")).alias("n_g"),
+        dec38(F.sum("cnt_gv")).alias("n_g"),
         F.sum(F.col("r2") * F.col("r2") * F.col("cnt_gv")).alias("s_j"),
         F.sum(
             F.col("r2") * F.col("r2") * F.col("r2") * F.col("r2") * F.col("cnt_gv")
@@ -774,7 +774,7 @@ def stats_conover_squared_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _cox_stuart_oracle() -> str:
-    hd = _sql_halfup_div
+    hd = sql_halfup_div
     return f"""
     WITH daily AS (
       SELECT CAST(o_orderdate AS DATE) AS day, CAST(count(*) AS BIGINT) AS y
@@ -875,7 +875,7 @@ def stats_cox_stuart_trend_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_neg",
             F.when(
                 m > 0,
-                _halfup_div(m6 * _dec(diff) * _dec(diff), _dec(m)).cast("long")
+                halfup_div(m6 * dec38(diff) * dec38(diff), dec38(m)).cast("long")
                 * F.when(diff < 0, F.lit(-1)).otherwise(F.lit(1)),
             )
             .cast("long")

@@ -30,9 +30,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.exact import dec38, halfup_div, sql_halfup_div
 from ..registry import register
 from ..tables import Tables
-from .roundeleven import _dec, _halfup_div, _sql_halfup_div
 from .roundeleven2 import _SQL_DAILY_COUNTS_IDX, _daily_counts_idx
 
 # ---------------------------------------------------------------------------
@@ -63,7 +63,7 @@ def _stl_pgram_oracle() -> str:
       SELECT CAST(count(*) AS HUGEINT) AS m, CAST(sum(r) AS HUGEINT) AS sr
       FROM rem0
     ), rbar AS (
-      SELECT m, {_sql_halfup_div('sr', 'm')} AS rb FROM rtot
+      SELECT m, {sql_halfup_div('sr', 'm')} AS rb FROM rtot
     ), cent AS (
       SELECT CAST(r0.k AS BIGINT) AS k, (r0.r - rb.rb) AS z
       FROM rem0 r0, rbar rb
@@ -116,9 +116,9 @@ def events_stl_residual_periodogram(spark: SparkSession, sf_dir: str) -> DataFra
     t = Tables(spark, sf_dir)
     rem = _stl_rem(t).select("k", "r")
     rtot = rem.agg(
-        _dec(F.count(F.lit(1))).alias("m"), F.sum("r").alias("sr")
+        dec38(F.count(F.lit(1))).alias("m"), F.sum("r").alias("sr")
     )
-    rbar = rtot.select("m", _halfup_div(F.col("sr"), F.col("m")).alias("rb"))
+    rbar = rtot.select("m", halfup_div(F.col("sr"), F.col("m")).alias("rb"))
     cent = rem.crossJoin(F.broadcast(rbar)).select(
         F.col("k").cast("long").alias("k"),
         (F.col("r") - F.col("rb")).alias("z"),
@@ -167,7 +167,7 @@ def events_stl_residual_periodogram(spark: SparkSession, sf_dir: str) -> DataFra
             F.sum("zc").alias("sc"),
             F.sum("zs").alias("ss"),
             F.sum("z2").alias("zrr"),
-            _dec(F.count(F.lit(1))).alias("m"),
+            dec38(F.count(F.lit(1))).alias("m"),
         )
     )
     num = F.lit(2).cast("decimal(38,0)") * (
@@ -196,7 +196,7 @@ def events_stl_residual_periodogram(spark: SparkSession, sf_dir: str) -> DataFra
 
 
 def _turning_oracle() -> str:
-    hd = _sql_halfup_div
+    hd = sql_halfup_div
     return f"""
     WITH {_SQL_DAILY_COUNTS_IDX}
     , tp AS (
@@ -261,14 +261,14 @@ def events_turning_points_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     return nn.crossJoin(F.broadcast(tp)).select(
         F.col("n").alias("n_days"),
         F.col("t").alias("n_turning"),
-        _halfup_div(m6 * 2 * _dec(F.col("n") - 2), F.lit(3).cast("decimal(38,0)"))
+        halfup_div(m6 * 2 * dec38(F.col("n") - 2), F.lit(3).cast("decimal(38,0)"))
         .cast("long")
         .alias("expected_micro"),
         F.when(
             16 * F.col("n") - 29 > 0,
-            _halfup_div(
-                F.lit(10_000_000).cast("decimal(38,0)") * _dec(d) * _dec(d),
-                _dec(16 * F.col("n") - 29),
+            halfup_div(
+                F.lit(10_000_000).cast("decimal(38,0)") * dec38(d) * dec38(d),
+                dec38(16 * F.col("n") - 29),
             ).cast("long")
             * F.when(d < 0, F.lit(-1)).otherwise(F.lit(1)),
         )
@@ -283,7 +283,7 @@ def events_turning_points_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _records_oracle() -> str:
-    hd = _sql_halfup_div
+    hd = sql_halfup_div
     return f"""
     WITH {_SQL_DAILY_COUNTS_IDX}
     , rec AS (
@@ -356,7 +356,7 @@ def events_records_foster_stuart(spark: SparkSession, sf_dir: str) -> DataFrame:
     m6 = F.lit(1_000_000).cast("decimal(38,0)")
     var_m = (
         idx.filter(F.col("k") >= 2)
-        .agg(F.sum(_halfup_div(m6, _dec(F.col("k")))).alias("hsum"))
+        .agg(F.sum(halfup_div(m6, dec38(F.col("k")))).alias("hsum"))
         .select((2 * F.col("hsum")).cast("long").alias("v"))
     )
     nn = idx.agg(F.count(F.lit(1)).cast("long").alias("n"))
@@ -373,9 +373,9 @@ def events_records_foster_stuart(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("v").alias("var_d_micro"),
             F.when(
                 F.col("v") > 0,
-                _halfup_div(
-                    F.lit(10**12).cast("decimal(38,0)") * _dec(d) * _dec(d),
-                    _dec(F.col("v")),
+                halfup_div(
+                    F.lit(10**12).cast("decimal(38,0)") * dec38(d) * dec38(d),
+                    dec38(F.col("v")),
                 ).cast("long")
                 * F.when(d < 0, F.lit(-1)).otherwise(F.lit(1)),
             )
@@ -396,7 +396,7 @@ LN_1E6_MICRO = 13_815_511  # det-ln(1e6) micro literal (roundtwelve convention)
 def _perm_entropy_oracle() -> str:
     from ..functions.detmath import sql_det_ln_steps
 
-    hd = _sql_halfup_div
+    hd = sql_halfup_div
     # rank of element i among the triple with ties broken by time
     # index: rank_i = #{j : y_j < y_i or (y_j = y_i and j < i)}
     return f"""
@@ -494,13 +494,13 @@ def events_permutation_entropy3(spark: SparkSession, sf_dir: str) -> DataFrame:
         "c",
         "m",
         "lnq",
-        _halfup_div(m6 * _dec(F.col("c")), _dec(F.col("m"))).cast("long").alias(
+        halfup_div(m6 * dec38(F.col("c")), dec38(F.col("m"))).cast("long").alias(
             "share_micro"
         ),
     )
     ent = terms.agg(
-        F.sum(_dec(F.col("c")) * F.col("lnq")).alias("w"),
-        _dec(F.max("m")).alias("mt"),
+        F.sum(dec38(F.col("c")) * F.col("lnq")).alias("w"),
+        dec38(F.max("m")).alias("mt"),
     )
     return (
         terms.crossJoin(F.broadcast(ent))
@@ -508,10 +508,10 @@ def events_permutation_entropy3(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("code").alias("pattern_code"),
             F.col("c").alias("n_triples"),
             "share_micro",
-            _halfup_div(F.col("w"), F.col("mt")).cast("long").alias(
+            halfup_div(F.col("w"), F.col("mt")).cast("long").alias(
                 "perm_entropy_micro"
             ),
-            _halfup_div(
+            halfup_div(
                 m6 * F.col("w"), F.col("mt") * F.lit(LN_6_MICRO).cast("decimal(38,0)")
             )
             .cast("long")
@@ -527,7 +527,7 @@ def events_permutation_entropy3(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _drawdown_oracle() -> str:
-    hd = _sql_halfup_div
+    hd = sql_halfup_div
     return f"""
     WITH {_SQL_DAILY_COUNTS_IDX}
     , tot AS (
@@ -588,7 +588,7 @@ def events_cusum_max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     t = Tables(spark, sf_dir)
     idx = _daily_counts_idx(t)
-    tot = idx.agg(_dec(F.count(F.lit(1))).alias("m"), F.sum("y").alias("sy"))
+    tot = idx.agg(dec38(F.count(F.lit(1))).alias("m"), F.sum("y").alias("sy"))
     # cumulative path + running peak as ONE ordered pass over the
     # POST-AGGREGATION ~2.4k-day series (the stats_ljung_box_daily
     # allowlist class — day-domain-bounded, never row-scaled). The
@@ -634,7 +634,7 @@ def events_cusum_max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     m6 = F.lit(1_000_000).cast("decimal(38,0)")
     return tot.crossJoin(F.broadcast(best)).select(
         F.col("m").cast("long").alias("n_days"),
-        _halfup_div(m6 * F.col("b.ddv"), F.col("m")).cast("long").alias(
+        halfup_div(m6 * F.col("b.ddv"), F.col("m")).cast("long").alias(
             "max_drawdown_orders_micro"
         ),
         F.col("b.peak_day").cast("timestamp").alias("peak_day"),
@@ -719,7 +719,7 @@ def stats_arch_lm_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = z.select(F.col("k").alias("kb"), F.col("z").alias("y"))
     pairs = a.join(b, F.col("kb") == F.col("ka") + 1)
     s = pairs.agg(
-        _dec(F.count(F.lit(1))).alias("np"),
+        dec38(F.count(F.lit(1))).alias("np"),
         F.sum("x").alias("sx"),
         F.sum("y").alias("sy"),
         F.sum(F.col("x") * F.col("x")).alias("sxx"),

@@ -30,9 +30,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.exact import dec38, halfup_div, sql_halfup_div
 from ..registry import register
 from ..tables import Tables
-from .roundeleven import _dec, _halfup_div, _sql_halfup_div
 
 # ---------------------------------------------------------------------------
 # 1. Weighted (co-order strength) triangle aggregate
@@ -56,7 +56,7 @@ _SQL_WEDGES = """
 def _wtri_oracle() -> str:
     from .graph import _SQL_TRI_CTES
 
-    hd = _sql_halfup_div
+    hd = sql_halfup_div
     return _SQL_TRI_CTES + f"""
     , {_SQL_WEDGES.strip().rstrip()}
     , tw AS (
@@ -117,8 +117,7 @@ def _wedges_build(t: Tables) -> DataFrame:
     the same basket pair generation as ``graph._edges`` but keeping
     multiplicity. Extracted in round 13 so the Barrat weighted-
     clustering op shares ONE derivation with
-    ``graph_weighted_triangles`` (the shared-derivation authoring rule
-    added its consumer to ``_EVIDENCE_MIN_ROUND`` in the same commit)."""
+    ``graph_weighted_triangles``."""
     arr = F.sort_array(F.collect_set("l_partkey"))
     baskets = (
         t.lineitem.select("l_orderkey", "l_partkey")
@@ -205,7 +204,7 @@ def graph_weighted_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
         "sum_max_w",
         F.when(
             F.col("n_triangles") > 0,
-            _halfup_div(m6 * _dec(F.col("sum_min_w")), _dec(F.col("n_triangles")))
+            halfup_div(m6 * dec38(F.col("sum_min_w")), dec38(F.col("n_triangles")))
             .cast("long"),
         ).alias("mean_min_w_micro"),
     )
@@ -219,7 +218,7 @@ def graph_weighted_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _brand_assort_oracle() -> str:
     from .graph import _SQL_EDGES
 
-    hd = _sql_halfup_div
+    hd = sql_halfup_div
     return _SQL_EDGES + f"""
     , ends AS (
       SELECT e.u AS node, e.v AS other FROM edges e
@@ -289,7 +288,7 @@ def graph_attribute_assortativity_brand(spark: SparkSession, sf_dir: str) -> Dat
         ends.join(brand, "node")
         .join(brand2, "other")
         .groupBy("bx", "by_")
-        .agg(_dec(F.count(F.lit(1))).alias("e_xy"))
+        .agg(dec38(F.count(F.lit(1))).alias("e_xy"))
     )
     sums = mix.agg(
         F.sum("e_xy").alias("m"),
@@ -310,7 +309,7 @@ def graph_attribute_assortativity_brand(spark: SparkSession, sf_dir: str) -> Dat
         F.col("tr").cast("long").alias("n_same_brand_ends"),
         F.when(
             den > 0,
-            _halfup_div(m6 * (F.col("m") * F.col("tr") - F.col("sa2")), den).cast(
+            halfup_div(m6 * (F.col("m") * F.col("tr") - F.col("sa2")), den).cast(
                 "long"
             ),
         ).alias("assortativity_micro"),
@@ -325,7 +324,7 @@ def graph_attribute_assortativity_brand(spark: SparkSession, sf_dir: str) -> Dat
 def _knn_curve_oracle() -> str:
     from .graph import _SQL_EDGES
 
-    hd = _sql_halfup_div
+    hd = sql_halfup_div
     return _SQL_EDGES + f"""
     , ends AS (
       SELECT u AS node, v AS other FROM edges
@@ -383,7 +382,7 @@ def graph_avg_neighbor_degree_curve(spark: SparkSession, sf_dir: str) -> DataFra
     nsum = (
         ends.join(d2, "other")
         .groupBy("node")
-        .agg(_dec(F.sum("odeg")).alias("snd"))
+        .agg(dec38(F.sum("odeg")).alias("snd"))
     )
     curve = (
         deg.join(nsum, "node")
@@ -397,8 +396,8 @@ def graph_avg_neighbor_degree_curve(spark: SparkSession, sf_dir: str) -> DataFra
     return curve.select(
         "degree",
         "n_nodes",
-        _halfup_div(
-            m6 * F.col("ssnd"), _dec(F.col("degree")) * F.col("n_nodes")
+        halfup_div(
+            m6 * F.col("ssnd"), dec38(F.col("degree")) * F.col("n_nodes")
         )
         .cast("long")
         .alias("avg_neighbor_degree_micro"),
@@ -413,7 +412,7 @@ def graph_avg_neighbor_degree_curve(spark: SparkSession, sf_dir: str) -> DataFra
 def _vmeasure_oracle() -> str:
     from ..functions.detmath import sql_det_ln_steps
 
-    hd = _sql_halfup_div
+    hd = sql_halfup_div
     return f"""
     WITH ck AS (
       SELECT lang AS c, source AS k, CAST(count(*) AS BIGINT) AS n_ck
@@ -499,7 +498,7 @@ def text_vmeasure_lang_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         cc.crossJoin(F.broadcast(nn))
         .select(
             (
-                _dec(F.col("n_c"))
+                dec38(F.col("n_c"))
                 * det_ln_q(F.col("n").cast("double") / F.col("n_c").cast("double"))
             ).alias("t")
         )
@@ -509,7 +508,7 @@ def text_vmeasure_lang_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         kk.crossJoin(F.broadcast(nn))
         .select(
             (
-                _dec(F.col("n_k"))
+                dec38(F.col("n_k"))
                 * det_ln_q(F.col("n").cast("double") / F.col("n_k").cast("double"))
             ).alias("t")
         )
@@ -520,11 +519,11 @@ def text_vmeasure_lang_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(cc), "c")
         .select(
             (
-                _dec(F.col("n_ck"))
+                dec38(F.col("n_ck"))
                 * det_ln_q(F.col("n_k").cast("double") / F.col("n_ck").cast("double"))
             ).alias("tck"),
             (
-                _dec(F.col("n_ck"))
+                dec38(F.col("n_ck"))
                 * det_ln_q(F.col("n_c").cast("double") / F.col("n_ck").cast("double"))
             ).alias("tkc"),
         )
@@ -533,11 +532,11 @@ def text_vmeasure_lang_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     m6 = F.lit(1_000_000).cast("decimal(38,0)")
     h = F.when(
         F.col("w_c") > 0,
-        _halfup_div(m6 * (F.col("w_c") - F.col("w_ck")), F.col("w_c")),
+        halfup_div(m6 * (F.col("w_c") - F.col("w_ck")), F.col("w_c")),
     )
     cm = F.when(
         F.col("w_k") > 0,
-        _halfup_div(m6 * (F.col("w_k") - F.col("w_kc")), F.col("w_k")),
+        halfup_div(m6 * (F.col("w_k") - F.col("w_kc")), F.col("w_k")),
     )
     counts = (
         nn.crossJoin(F.broadcast(cc.agg(F.count(F.lit(1)).cast("long").alias("n_langs"))))
@@ -556,7 +555,7 @@ def text_vmeasure_lang_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("cm").cast("long").alias("completeness_micro"),
         F.when(
             F.col("h") + F.col("cm") > 0,
-            _halfup_div(
+            halfup_div(
                 F.lit(2).cast("decimal(38,0)") * F.col("h") * F.col("cm"),
                 F.col("h") + F.col("cm"),
             ).cast("long"),
@@ -572,7 +571,7 @@ MSTTR_SEG = 50  # tokens per segment (the Johnson 1944 convention)
 
 
 def _msttr_oracle() -> str:
-    hd = _sql_halfup_div
+    hd = sql_halfup_div
     return f"""
     WITH toks AS (
       SELECT doc_id, lang,
@@ -661,8 +660,8 @@ def text_msttr_segmental(spark: SparkSession, sf_dir: str) -> DataFrame:
     return bylang.select(
         "lang",
         "n_segments",
-        _halfup_div(
-            m6 * _dec(F.col("sum_types")),
+        halfup_div(
+            m6 * dec38(F.col("sum_types")),
             F.lit(MSTTR_SEG).cast("decimal(38,0)") * F.col("n_segments"),
         )
         .cast("long")

@@ -28,9 +28,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.exact import dec38, halfup_div, sql_halfup_div
 from ..registry import register
 from ..tables import Tables
-from .roundeleven import _dec, _halfup_div, _sql_halfup_div
 
 # ---------------------------------------------------------------------------
 # 1. PAV blocks vs ROC upper-hull vertices
@@ -41,7 +41,7 @@ def _pav_hull_oracle() -> str:
     from .ml import _scored_labeled_sql
     from .roundten3 import _sql_iso_fit_ctes
 
-    hd = _sql_halfup_div
+    hd = sql_halfup_div
     return (
         _scored_labeled_sql()
         + ", "
@@ -142,8 +142,8 @@ def ml_pav_roc_hull_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("abin")
         .agg(
             F.count("bbin").cast("long").alias("m"),
-            _dec(F.coalesce(F.sum("fp"), F.lit(0))).alias("x"),
-            _dec(F.coalesce(F.sum("tp"), F.lit(0))).alias("y"),
+            dec38(F.coalesce(F.sum("fp"), F.lit(0))).alias("x"),
+            dec38(F.coalesce(F.sum("tp"), F.lit(0))).alias("y"),
         )
         .select("m", "x", "y")
     )
@@ -195,7 +195,7 @@ def ml_pav_roc_hull_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("pav_hull_equiv"),
             F.when(
                 (F.col("nneg") > 0) & (F.col("npos") > 0),
-                _halfup_div(
+                halfup_div(
                     m6 * F.col("tri2"), 2 * F.col("nneg") * F.col("npos")
                 ).cast("long"),
             ).alias("hull_auc_micro"),
@@ -213,7 +213,7 @@ DCA_THRESHOLDS_MILLI = tuple(range(100, 1000, 100))  # 0.1 .. 0.9
 def _dca_oracle() -> str:
     from .ml import _scored_labeled_sql
 
-    hd = _sql_halfup_div
+    hd = sql_halfup_div
     ts = ", ".join(str(t) for t in DCA_THRESHOLDS_MILLI)
     return (
         _scored_labeled_sql()
@@ -292,7 +292,7 @@ def ml_decision_curve_net_benefit(spark: SparkSession, sf_dir: str) -> DataFrame
     )
     m6 = F.lit(1_000_000).cast("decimal(38,0)")
     fp = F.col("n_sel") - F.col("tp")
-    den = _dec(F.col("nn")) * (1000 - F.col("t"))
+    den = dec38(F.col("nn")) * (1000 - F.col("t"))
     return (
         sel.crossJoin(F.broadcast(tot))
         .select(
@@ -300,17 +300,17 @@ def ml_decision_curve_net_benefit(spark: SparkSession, sf_dir: str) -> DataFrame
             "n_sel",
             "tp",
             fp.alias("fp"),
-            _halfup_div(
-                m6 * (_dec(F.col("tp")) * (1000 - F.col("t")) - _dec(fp) * F.col("t")),
+            halfup_div(
+                m6 * (dec38(F.col("tp")) * (1000 - F.col("t")) - dec38(fp) * F.col("t")),
                 den,
             )
             .cast("long")
             .alias("net_benefit_micro"),
-            _halfup_div(
+            halfup_div(
                 m6
                 * (
-                    _dec(F.col("p")) * (1000 - F.col("t"))
-                    - _dec(F.col("nn") - F.col("p")) * F.col("t")
+                    dec38(F.col("p")) * (1000 - F.col("t"))
+                    - dec38(F.col("nn") - F.col("p")) * F.col("t")
                 ),
                 den,
             )
@@ -329,7 +329,7 @@ def ml_decision_curve_net_benefit(spark: SparkSession, sf_dir: str) -> DataFrame
 def _hl_oracle() -> str:
     from .ml import _scored_labeled_sql
 
-    hd = _sql_halfup_div
+    hd = sql_halfup_div
     return (
         _scored_labeled_sql()
         + f"""
@@ -393,15 +393,15 @@ def ml_hosmer_lemeshow_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).agg(
         F.count(F.lit(1)).cast("long").alias("n_k"),
         F.sum("label").cast("long").alias("pos_k"),
-        _dec(F.sum("score_q")).alias("s_k"),
+        dec38(F.sum("score_q")).alias("s_k"),
     )
     m6 = F.lit(1_000_000).cast("decimal(38,0)")
-    onum = _dec(10000 * F.col("pos_k")) - F.col("s_k")
+    onum = dec38(10000 * F.col("pos_k")) - F.col("s_k")
     term = F.when(
-        (F.col("s_k") > 0) & (F.col("s_k") < _dec(10000 * F.col("n_k"))),
-        _halfup_div(
+        (F.col("s_k") > 0) & (F.col("s_k") < dec38(10000 * F.col("n_k"))),
+        halfup_div(
             m6 * onum * onum * F.col("n_k"),
-            F.col("s_k") * (_dec(10000 * F.col("n_k")) - F.col("s_k")),
+            F.col("s_k") * (dec38(10000 * F.col("n_k")) - F.col("s_k")),
         ),
     )
     terms = bins.select(
@@ -437,7 +437,7 @@ KAPPA_BANDS = 4
 def _wkappa_oracle() -> str:
     from .ml import _scored_labeled_sql
 
-    hd = _sql_halfup_div
+    hd = sql_halfup_div
     b = KAPPA_BANDS
     return (
         _scored_labeled_sql()
@@ -516,7 +516,7 @@ def ml_weighted_kappa_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("j"),
         )
     )
-    cells = lab.groupBy("i", "j").agg(_dec(F.count(F.lit(1))).alias("n"))
+    cells = lab.groupBy("i", "j").agg(dec38(F.count(F.lit(1))).alias("n"))
     marg = cells.agg(
         F.sum("n").alias("m"),
         F.sum(
@@ -545,21 +545,21 @@ def ml_weighted_kappa_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(ob))
         .select(
             F.col("m").cast("long").alias("n_docs"),
-            _halfup_div(m6 * F.col("diag"), F.col("m")).cast("long").alias(
+            halfup_div(m6 * F.col("diag"), F.col("m")).cast("long").alias(
                 "diag_share_micro"
             ),
             F.when(
                 F.col("el") > 0,
                 (
                     F.lit(1_000_000)
-                    - _halfup_div(m6 * F.col("ol") * F.col("m"), F.col("el"))
+                    - halfup_div(m6 * F.col("ol") * F.col("m"), F.col("el"))
                 ).cast("long"),
             ).alias("kappa_linear_micro"),
             F.when(
                 F.col("eq") > 0,
                 (
                     F.lit(1_000_000)
-                    - _halfup_div(m6 * F.col("oq") * F.col("m"), F.col("eq"))
+                    - halfup_div(m6 * F.col("oq") * F.col("m"), F.col("eq"))
                 ).cast("long"),
             ).alias("kappa_quadratic_micro"),
         )
@@ -585,7 +585,7 @@ RBO_W_MICRO = (
 def _rbo_oracle() -> str:
     from .ml import _scored_labeled_sql
 
-    hd = _sql_halfup_div
+    hd = sql_halfup_div
     d = RBO_DEPTH
     ws = ", ".join(str(w) for w in RBO_W_MICRO)
     return (
@@ -704,9 +704,9 @@ def ml_rank_rbo_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     terms = agree.select(
         "dep",
         "cd",
-        _halfup_div(
-            _dec(F.element_at(warr, F.col("dep").cast("int")) * F.col("cd")),
-            _dec(F.col("dep")),
+        halfup_div(
+            dec38(F.element_at(warr, F.col("dep").cast("int")) * F.col("cd")),
+            dec38(F.col("dep")),
         ).alias("term"),
     )
     n_common = common.agg(F.count(F.lit(1)).cast("long").alias("n_common"))

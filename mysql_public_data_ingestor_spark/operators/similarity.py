@@ -971,8 +971,7 @@ def _pq_sub_cb(t: Tables):
     """(sub, cb): the per-subspace vector blocks and the 8-codeword
     codebook blocks — the PQ index head shared by the ADC search and
     the round-13 distortion audit (extracted in round 13, not
-    rewritten; the verified consumer re-entered _EVIDENCE_MIN_ROUND
-    per the shared-derivation rule)."""
+    rewritten)."""
     emb = t.embeddings.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )

@@ -1,9 +1,14 @@
 """Central query registry backing ``__spark_entry__.py``.
 
-Every implemented operator registers a named query:
-  - ``fn(spark, sf_dir) -> DataFrame`` — the Spark-first implementation;
-  - ``oracle`` — equivalent ANSI SQL for the DuckDB oracle (or ``None``
+A query registers one way: decorate ``fn(spark, sf_dir) -> DataFrame``
+with ``@register(name, oracle=...)`` in an ``operators`` module, and list
+that module in :func:`_ensure_loaded`'s import tuple.
+  - ``fn`` is the Spark-first implementation;
+  - ``oracle`` is equivalent ANSI SQL for the DuckDB oracle (or ``None``
     for genuinely non-SQL-expressible ops → driver runs rows-only check).
+
+:func:`all_queries` returns the registry sorted by name, so the order
+does not depend on which module was imported first.
 
 Column names of the Spark result and the oracle result MUST match
 (driver sorts columns by name then value-hashes). Aggregate/computed
@@ -44,125 +49,12 @@ def register(name: str, oracle: Optional[str] = None, doc: str = ""):
     return deco
 
 
-# The external harness evaluates the first N entries of ``queries()`` in
-# iteration order (N=50 observed). Round 1 verified the first 50 in
-# registration order; this list front-loads the queries that still need a
-# fresh correctness row (round-1 unchecked + fixed + newly added), so each
-# round's window covers the queries with the least prior evidence. All
-# remaining queries keep registration order behind them and stay covered
-# by the identical local gate (tools/check_correctness.py).
-_DRIVER_WINDOW_PRIORITY: list[str] = [
-    # Round-10 window. CORRECTNESS_r09 came back 50/50 green (the
-    # recall-audit re-verification included — its _EVIDENCE_MIN_ROUND
-    # entry is pruned per the authoring rule), so the backlog is
-    # ZERO and no manual head is needed: the 6 activated roundtenb
-    # queue names plus all new round-10 registrations are
-    # auto-unverified and sort first in registration order.
-    # Budget: queue activations + new round-10 registrations <= 50
-    # keeps everything inside the driver's evaluation window
-    # (tests/test_entry.py asserts it).
-]
-
-# Evidence invalidation (ADVICE r5 medium): when a verified query's
-# output semantics change in round N, prior rounds' hash_match rows are
-# stale — only evidence from CORRECTNESS_r{>=N}.json counts for it.
-# Authoring rule: ANY change to a verified query's output values adds
-# an entry here (and a _DRIVER_WINDOW_PRIORITY slot) in the SAME
-# commit. Names auto-clear once fresh evidence lands; prune inert
-# entries at the start of the next round (round-6's eight entries all
-# collected CORRECTNESS_r06 evidence and were pruned in round 7).
-#
-# Shared-derivation extension (VERDICT r12 item 6, the r10 twin-sided
-# lesson applied to refactors): when a refactor rewrites a derivation
-# that BOTH the Spark query and its DuckDB oracle consume (e.g. the
-# `70cea64` STL / Breusch–Pagan residual CTE extraction in round 12),
-# the consuming verified queries get entries here too — window budget
-# permitting — even though output values are unchanged. A twin-sided
-# derivation is exactly where a bug can hide from the parity gate, so
-# the driver should re-check the consumers on its next window.
-_EVIDENCE_MIN_ROUND: dict[str, int] = {
-    # round-14 pruning (VERDICT r13 item 1): the two round-13
-    # shared-derivation entries — graph_weighted_triangles (the
-    # roundtwelve8._wedges extraction) and similarity_pq_adc_topk (the
-    # similarity._pq_sub_cb extraction) — both collected fresh
-    # CORRECTNESS_r13 hash-green evidence and are inert; pruned per the
-    # authoring rule. Earlier prunes: round-9 recall-audit (r9
-    # evidence), round-11 sketch_ddsketch_quantiles (r11 evidence).
-    #
-    # Authoring-rule hardening (VERDICT r13 item 1): window-budget
-    # self-expiry conditions in tests must accept the
-    # evidence-landed-but-entry-not-yet-pruned interim state — assert
-    # "name unverified OR fresh hash-green evidence >= the entry's
-    # min-round exists on disk", never "entry already pruned".
-}
-
-
-def _verified_names(max_round: Optional[int] = None) -> tuple[set[str], set[str]]:
-    """(hash_verified, rows_verified) query names across all prior
-    rounds' CORRECTNESS_r*.json. Used to rotate the evaluation window:
-    once a query has external evidence, it yields its slot to queries
-    that have none. Missing/unreadable files mean no evidence.
-    Evidence older than ``_EVIDENCE_MIN_ROUND[name]`` is ignored — a
-    semantic change invalidates earlier hash rows.
-
-    ``max_round`` caps the evidence considered (inclusive): tests that
-    snapshot a historical window composition pass the round the
-    snapshot was taken at, so future driver evidence can never redden
-    them (VERDICT r10 item 1)."""
-    import glob
-    import json
-    import os
-    import re
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    hash_verified: set[str] = set()
-    rows_verified: set[str] = set()
-    for path in glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        rnd = int(m.group(1)) if m else 0
-        if max_round is not None and rnd > max_round:
-            continue
-        try:
-            with open(path) as f:
-                rows = json.load(f)
-        except (OSError, json.JSONDecodeError):
-            continue
-        if not isinstance(rows, dict):
-            continue
-        for name, r in rows.items():
-            if not isinstance(r, dict):
-                continue
-            if rnd < _EVIDENCE_MIN_ROUND.get(name, 0):
-                continue
-            if r.get("hash_match") is True:
-                hash_verified.add(name)
-            elif r.get("err") == "no_oracle" and r.get("spark_rows") is not None:
-                rows_verified.add(name)
-    return hash_verified, rows_verified
-
-
 def all_queries() -> dict[str, QuerySpec]:
-    """Registry in evaluation order: never-externally-verified queries
-    first (manual priority order, then registration order), verified
-    ones after — so an evaluator that checks the first N entries always
-    spends its window on the least-evidenced queries. A query counts as
-    verified only at its current evidence tier: a rows-only row does
-    not retire a query that has since gained an oracle."""
+    """Every registered query, sorted by name. The order is fixed by the
+    names alone, so neither module import order nor helper calls made at
+    decoration time can change it."""
     _ensure_loaded()
-    hash_verified, rows_verified = _verified_names()
-
-    def is_verified(name: str) -> bool:
-        if name in hash_verified:
-            return True
-        return _REGISTRY[name].oracle is None and name in rows_verified
-
-    manual_unverified = [
-        n for n in _DRIVER_WINDOW_PRIORITY if n in _REGISTRY and not is_verified(n)
-    ]
-    head = set(manual_unverified)
-    auto_unverified = [n for n in _REGISTRY if not is_verified(n) and n not in head]
-    rest = [n for n in _REGISTRY if is_verified(n) and n not in head]
-    return {n: _REGISTRY[n] for n in [*manual_unverified, *auto_unverified, *rest]}
+    return {name: _REGISTRY[name] for name in sorted(_REGISTRY)}
 
 
 def queries() -> dict[str, QueryFn]:
@@ -196,33 +88,50 @@ def _ensure_loaded() -> None:
         roundeight,
         roundeight2,
         roundeight3,
+        roundeleven,
         roundeleven2,
         roundeleven3,
         roundeleven4,
         roundeleven5,
         roundeleven6,
         roundeleven7,
-        roundnine2,
-        roundten2,
-        roundten3,
-        roundtwelve6,
-        roundtwelve7,
-        roundtwelve8,
-        roundtwelve9,
-        roundtwelve10,
-        roundthirteen5,
-        roundthirteen6,
-        roundthirteen7,
-        roundthirteen8,
-        roundthirteen9,
+        roundfive,
+        roundfourteen,
+        roundfourteen2,
+        roundfourteen3,
         roundfourteen4,
         roundfourteen5,
         roundfourteen6,
         roundfourteen7,
         roundfourteen8,
         roundfourteen9,
+        roundnine,
+        roundnine2,
         roundsix,
         roundsix2,
+        roundten,
+        roundten2,
+        roundten3,
+        roundtenb,
+        roundthirteen,
+        roundthirteen2,
+        roundthirteen3,
+        roundthirteen4,
+        roundthirteen5,
+        roundthirteen6,
+        roundthirteen7,
+        roundthirteen8,
+        roundthirteen9,
+        roundtwelve,
+        roundtwelve10,
+        roundtwelve2,
+        roundtwelve3,
+        roundtwelve4,
+        roundtwelve5,
+        roundtwelve6,
+        roundtwelve7,
+        roundtwelve8,
+        roundtwelve9,
         similarity,
         sketches,
         stats,
@@ -233,75 +142,5 @@ def _ensure_loaded() -> None:
         windows,
     )
     from .streaming import batch_equivalents  # noqa: F401
-
-    # round-5 activation of the banked operator queue (VERDICT r4 item 1)
-    from .operators import roundfive
-
-    roundfive.activate()
-
-    # round-9 activation of the round-8-banked queue (VERDICT r8 item 1)
-    from .operators import roundnine
-
-    roundnine.activate()
-
-    # round-9 activation of the roundten batch: banked mid-round, then
-    # flipped on in the SAME round once the window budget confirmed
-    # 48/50 — banking is for full windows, and this one was not full
-    from .operators import roundten
-
-    roundten.activate()
-
-    # round-10 activation of the round-9-banked batch B (VERDICT r9
-    # item 1: gates written and recorded in tests/test_roundtenb.py +
-    # SCALE §5i before this flip)
-    from .operators import roundtenb
-
-    roundtenb.activate()
-
-    # round-11 activation of the round-10-banked queue (VERDICT r10
-    # item 3: 20 ops, gates + 46 tests + SCALE §§5i.11–5i.15 landed in
-    # the same commits as the code)
-    from .operators import roundeleven
-
-    roundeleven.activate()
-
-    # round-12 activation of the round-11-banked queue (VERDICT r11
-    # item 1: 23 ops across five modules; gates in
-    # tests/test_roundtwelve*.py, ×10 ladders in SCALE §§5j.6–5j.11;
-    # post-activation window budget asserted in tests/test_entry.py)
-    from .operators import (roundtwelve, roundtwelve2, roundtwelve3,
-                            roundtwelve4, roundtwelve5)
-
-    for m in (roundtwelve, roundtwelve2, roundtwelve3,
-              roundtwelve4, roundtwelve5):
-        m.activate()
-
-    # round-13 activation of the round-12-banked queue (VERDICT r12
-    # item 1: 18 ops across four modules; gates in
-    # tests/test_roundthirteen*.py, ×10 ladders in SCALE §5o;
-    # activation-time plan-allowlist entries landed in the same commit
-    # in tests/test_plans.py; post-activation window budget asserted
-    # in tests/test_entry.py).
-    from .operators import (roundthirteen, roundthirteen2,
-                            roundthirteen3, roundthirteen4)
-
-    for m in (roundthirteen, roundthirteen2, roundthirteen3,
-              roundthirteen4):
-        m.activate()
-
-    # round-14 activation of the round-13-banked queue (VERDICT r13
-    # item 3: 12 ops across three modules; gates in
-    # tests/test_roundfourteen{,2,3}.py, ×10 ladders in SCALE §5s;
-    # CORRECTNESS_r13 landed 50/50 so the unverified backlog was zero
-    # at flip time; the ONE activation-time plan-allowlist entry the
-    # batch-3 docstring calls out — ml_prg_at_operating_points, the
-    # fbeta/Youden descending score-grid cumulative class — lands in
-    # tests/test_plans.py in this same commit; post-activation window
-    # budget asserted in tests/test_entry.py).
-    from .operators import (roundfourteen, roundfourteen2,
-                            roundfourteen3)
-
-    for m in (roundfourteen, roundfourteen2, roundfourteen3):
-        m.activate()
 
     _LOADED = True

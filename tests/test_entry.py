@@ -23,157 +23,75 @@ def test_queries_and_oracles_consistent(spark):
         assert callable(fn)
 
 
-def test_evaluation_window_prioritizes_unverified():
-    """all_queries() must order queries without a prior external
-    correctness row before ones already hash-verified in any
-    CORRECTNESS_r*.json — the evaluator checks a fixed-size prefix, so
-    verified queries yielding their slots is what grows coverage
-    round over round. A rows-only row must not retire a query that has
-    since gained an oracle."""
-    from mysql_public_data_ingestor_spark import registry
-    from mysql_public_data_ingestor_spark.registry import all_queries
+def test_registry_loads_sorted_and_stable_in_fresh_interpreter():
+    """Registry guard, run in a fresh interpreter so no earlier import
+    order can mask a problem: every operator module is listed in
+    registry._ensure_loaded (a module dropped from that import tuple
+    shows up as a short name count), the entry surface is sorted by
+    name and identical on a second call, and building it reads no
+    CORRECTNESS_r*.json."""
+    import os
+    import subprocess
+    import sys
 
-    # Same evidence source the registry itself uses (globs every
-    # CORRECTNESS_r*.json) — hard-coding one round's file goes stale the
-    # moment the driver drops the next round's artifact.
-    hash_verified, rows_verified = registry._verified_names()
-    if not hash_verified:
-        import pytest
-
-        pytest.skip("no CORRECTNESS_r*.json present — nothing to rotate")
-    names = list(all_queries())
-    specs = all_queries()
-    unverified = [
-        n for n in names
-        if n not in hash_verified
-        and not (specs[n].oracle is None and n in rows_verified)
-    ]
-    verified_in_registry = [n for n in hash_verified if n in names]
-    if unverified and verified_in_registry:
-        # every never-hash-verified query precedes every hash-verified one
-        last_unverified_pos = max(names.index(n) for n in unverified)
-        first_verified_pos = min(names.index(n) for n in verified_in_registry)
-        assert last_unverified_pos < first_verified_pos, (
-            names[first_verified_pos], names[last_unverified_pos])
-    # rows-only-evidenced queries that have since gained an oracle must be
-    # treated as unverified (they re-enter the window at the front).
-    regained = [
-        n for n in rows_verified
-        if n in names and n not in hash_verified and specs[n].oracle is not None
-    ]
-    for n in regained:
-        if verified_in_registry:
-            assert names.index(n) < min(names.index(v) for v in verified_in_registry)
+    code = (
+        "import sys\n"
+        "opened = []\n"
+        "def hook(event, args):\n"
+        "    if event == 'open' and 'CORRECTNESS_r' in str(args[0]):\n"
+        "        opened.append(args[0])\n"
+        "sys.addaudithook(hook)\n"
+        "import __spark_entry__ as e\n"
+        "qs, osql = e.queries(), e.oracle_sql()\n"
+        "assert len(qs) == 611, len(qs)\n"
+        "assert len(osql) == 608, len(osql)\n"
+        "assert list(qs) == sorted(qs)\n"
+        "assert list(osql) == sorted(osql)\n"
+        "assert e.queries() == qs and e.oracle_sql() == osql\n"
+        "assert not opened, opened\n"
+        "print('REGISTRY OK')\n"
+    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c", code], capture_output=True, text=True, cwd=root
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert "REGISTRY OK" in out.stdout
 
 
 def test_bench_and_plan_dump_names_resolve():
-    """Every name in bench.HEADLINE and tools.dump_plans.PLAN_QUERIES
-    must exist in the registry — a typo here crashes the recording
-    harness's bench run (KeyError mid-bench), which is how a round
-    loses its official headline number."""
-    import bench
+    """Every name in tools.dump_plans.PLAN_QUERIES must exist in the
+    registry — a typo there crashes the plan dump with a KeyError. (The
+    bench iterates all_queries() itself, so it has no name list.)"""
     from mysql_public_data_ingestor_spark.registry import all_queries
     from tools import dump_plans
 
     registered = set(all_queries())
-    missing_bench = [n for n in bench.HEADLINE if n not in registered]
-    assert not missing_bench, missing_bench
-    assert len(set(bench.HEADLINE)) == len(bench.HEADLINE), "duplicate bench names"
     missing_plans = [n for n in dump_plans.PLAN_QUERIES if n not in registered]
     assert not missing_plans, missing_plans
 
 
-def test_driver_window_priority_names_resolve():
-    """Every name in registry._DRIVER_WINDOW_PRIORITY must exist in the
-    registry — the window builder filters with `n in _REGISTRY`, so a
-    typo silently drops that query from the external evaluator's
-    50-slot window (the same drift failure mode the bench/plan-dump
-    guard covers for its lists)."""
-    from mysql_public_data_ingestor_spark import registry
+def test_bench_history_matches_scale_and_cores(tmp_path, capsys):
+    """bench.py writes and diffs one detail file per (sf, cpus): a run at
+    another scale or core count finds no history rather than diffing
+    against the sf0.1 32-core file."""
+    import json
 
-    registered = set(registry._REGISTRY)
-    missing = [n for n in registry._DRIVER_WINDOW_PRIORITY if n not in registered]
-    assert not missing, missing
-    # and no duplicates, which would shrink the effective window
-    assert len(registry._DRIVER_WINDOW_PRIORITY) == len(
-        set(registry._DRIVER_WINDOW_PRIORITY)
-    )
+    import bench
 
+    assert bench.detail_sidecar(0.1, 32) == "BENCH_DETAIL.json"
+    assert bench.detail_sidecar(0.1, 8) == "BENCH_DETAIL_c8.json"
+    assert bench.detail_sidecar(1.0, 8) == "BENCH_DETAIL_sf1.0_c8.json"
 
-def test_r4_window_covers_entire_backlog():
-    """Round-4 contract (VERDICT r3 items 1-2): every registered query
-    that lacks a driver correctness row must sit inside the first 50
-    entries of all_queries() — the driver's evaluation window — so the
-    backlog drains to zero this round. Evidence-relative, so the test
-    stays true (and trivially green) after the driver's r4 artifact
-    lands and the rotation moves on."""
-    from mysql_public_data_ingestor_spark import registry
-    from mysql_public_data_ingestor_spark.registry import all_queries
+    rec = {"sf": 0.1, "cpus": 32, "value": 2.0, "queries": {"q": 2.0}}
+    (tmp_path / "BENCH_DETAIL.json").write_text(json.dumps(rec))
+    assert bench.load_history(str(tmp_path), 0.1, 32) == ("BENCH_DETAIL.json", rec)
+    # missing same-shape files: no fallback to the sf0.1 32-core record
+    assert bench.load_history(str(tmp_path), 0.1, 8) is None
+    assert bench.load_history(str(tmp_path), 1.0, 8) is None
 
-    hash_verified, rows_verified = registry._verified_names()
-    names = list(all_queries())
-    specs = all_queries()
-    unverified = [
-        n for n in names
-        if n not in hash_verified
-        and not (specs[n].oracle is None and n in rows_verified)
-    ]
-    window = set(names[:50])
-    stranded = [n for n in unverified if n not in window]
-    assert not stranded, (
-        f"{len(unverified)} unverified queries but these fall outside the "
-        f"50-slot driver window: {stranded} — either too many new "
-        f"registrations this round or the priority list regressed"
-    )
-
-
-def test_stale_evidence_names_sort_into_window_head(monkeypatch):
-    """Evidence invalidation contract (ADVICE r5 medium, VERDICT r6
-    item 6): marking a verified query stale via _EVIDENCE_MIN_ROUND
-    must push it back into the unverified head of all_queries() — in
-    front of every still-verified query — so the driver's 50-slot
-    window re-checks it next round. Simulated with a min-round beyond
-    any existing artifact, so the test is independent of which rounds'
-    CORRECTNESS files exist."""
-    from mysql_public_data_ingestor_spark import registry
-    from mysql_public_data_ingestor_spark.registry import all_queries
-
-    hash_verified, _ = registry._verified_names()
-    candidates = [n for n in hash_verified if n in registry._REGISTRY]
-    if not candidates:
-        import pytest
-
-        pytest.skip("no hash-verified queries to invalidate")
-    victim = sorted(candidates)[0]
-    monkeypatch.setattr(
-        registry, "_EVIDENCE_MIN_ROUND", {victim: 10_000}, raising=True
-    )
-    names = list(all_queries())
-    still_verified = [
-        n for n in hash_verified if n in names and n != victim
-    ]
-    assert still_verified, "need at least two verified queries"
-    assert names.index(victim) < min(names.index(n) for n in still_verified)
-
-
-def test_r12_post_activation_window_budget():
-    """Round-12 flip guard (VERDICT r11 item 7): activating the 23-op
-    round-11 bank must leave the driver's 50-slot window able to cover
-    every name lacking evidence. Pins the post-activation registry size
-    so any later registration this round consciously re-asserts the
-    budget in the same commit (493 = 470 r11-verified + 23 activated)."""
-    from mysql_public_data_ingestor_spark import registry
-    from mysql_public_data_ingestor_spark.registry import all_queries
-
-    specs = all_queries()
-    assert len(specs) >= 493, len(specs)
-    hash_verified, rows_verified = registry._verified_names()
-    unverified = [
-        n for n in specs
-        if n not in hash_verified
-        and not (specs[n].oracle is None and n in rows_verified)
-    ]
-    assert len(unverified) <= 50, (
-        f"{len(unverified)} unverified names exceed the driver's 50-slot "
-        f"window — the driver cannot cover all new work this round"
-    )
+    bench._report_deltas({"q": 1.0}, 1.0, None)
+    assert "no comparable history" in capsys.readouterr().err
+    bench._report_deltas({"q": 1.0}, 1.0, ("BENCH_DETAIL.json", rec))
+    err = capsys.readouterr().err
+    assert "vs BENCH_DETAIL.json" in err and "q: 2.00s -> 1.00s" in err

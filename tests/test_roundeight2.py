@@ -346,16 +346,3 @@ def test_interval_overlap_matches_python(spark, sf_dir):
     assert int(got["n_customers_overlapping"]) == len(per_cust)
     assert int(got["n_overlap_pairs"]) == sum(per_cust.values())
     assert int(got["max_pairs_per_customer"]) == max(per_cust.values())
-
-
-def test_window_budget_holds_round8():
-    """18 (priority + batches 1-2) + 17 (batches 3-4) + 4 (batch 5)
-    + 11 (batch 6) = 50 <= 50 — the round-8 window is exactly full."""
-    from mysql_public_data_ingestor_spark import registry
-
-    names = list(registry.all_queries().keys())
-    hv, rv = registry._verified_names()
-    unverified = [n for n in names if n not in hv and n not in rv]
-    assert len(unverified) <= 50, len(unverified)
-    head = set(names[:50])
-    assert set(unverified) <= head

@@ -1,10 +1,7 @@
-"""Round-11 banked-queue gate: every operator in
-``operators/roundeleven.py`` must pass the SAME raw-frame compare the
-driver's correctness gate uses, meet the registry-wide plan bars, and
-match an independent Python replica NOW — activation in round 11 is
-then a pure registration flip (the round-4/5, 8/9 and 9/10 pattern;
-the bank commit and its gate evidence land together, VERDICT r9
-item 7).
+"""Round-11 batch gate: every operator in ``operators/roundeleven.py``
+must pass the SAME raw-frame compare tools/check_correctness.py
+uses, meet the registry-wide plan bars, and match an independent
+Python replica.
 """
 
 from __future__ import annotations
@@ -15,33 +12,21 @@ import math
 import pytest
 
 from mysql_public_data_ingestor_spark.operators import roundeleven
+from mysql_public_data_ingestor_spark.registry import all_queries
 from mysql_public_data_ingestor_spark.tables import Tables
 from tools.check_correctness import compare, duck_connection
 
-
-def test_queue_is_activated_and_inside_window():
-    """Activation contract (round 11, VERDICT r10 item 3): all 20
-    banked names are registered, and every one still lacking external
-    evidence sits inside the 50-slot driver window (no stranded
-    queries). Evidence-relative, so the test stays green after the
-    window rotates."""
-    from mysql_public_data_ingestor_spark import registry
-
-    queued = {name for name, *_ in roundeleven.QUEUE}
-    assert len(queued) == 20
-    qs = list(registry.all_queries())
-    missing = queued - set(qs)
-    assert not missing, f"queued names not registered: {missing}"
-    hash_verified, _rows = registry._verified_names()
-    unverified = [n for n in queued if n not in hash_verified]
-    window = set(qs[:50])
-    stranded = set(unverified) - window
-    assert not stranded, f"unverified batch names outside the window: {stranded}"
+# (name, fn, oracle, doc) of every query the module registers
+QUERIES = [
+    (s.name, s.fn, s.oracle, s.doc)
+    for s in all_queries().values()
+    if s.fn.__module__ == roundeleven.__name__
+]
 
 
 def test_queue_entries_well_formed():
     seen = set()
-    for name, fn, oracle, doc in roundeleven.QUEUE:
+    for name, fn, oracle, doc in QUERIES:
         assert name not in seen, f"duplicate queue name {name}"
         seen.add(name)
         assert callable(fn)
@@ -50,7 +35,7 @@ def test_queue_entries_well_formed():
 
 
 @pytest.mark.parametrize(
-    "entry", roundeleven.QUEUE, ids=[name for name, *_ in roundeleven.QUEUE]
+    "entry", QUERIES, ids=[name for name, *_ in QUERIES]
 )
 def test_queued_query_matches_oracle(spark, sf_dir, entry):
     # RAW frames into compare() (it canons internally) — the round-9
@@ -87,8 +72,7 @@ def _sp_consumers(plan: str) -> list[str]:
 # privacy_membership_inference_audit runs its ROC cumulative window
 # over the <= 10001-value POST-AGGREGATION score grid — the same
 # bounded-domain class as ml_youden_optimal_threshold; it carries the
-# matching entry in tests/test_plans.py::SINGLE_PARTITION_ALLOWLIST so
-# the registry-wide sweep stays green after round-11 activation.
+# matching entry in tests/test_plans.py::SINGLE_PARTITION_ALLOWLIST.
 QUEUE_SP_ALLOWLIST = {"privacy_membership_inference_audit"}
 
 
@@ -96,7 +80,7 @@ def test_queue_single_partition_only_feeds_final_aggregates(spark, sf_dir):
     from mysql_public_data_ingestor_spark.plans import physical_plan
 
     offenders = {}
-    for name, fn, _oracle, _doc in roundeleven.QUEUE:
+    for name, fn, _oracle, _doc in QUERIES:
         if name in QUEUE_SP_ALLOWLIST:
             continue
         plan = physical_plan(fn(spark, sf_dir))
@@ -111,9 +95,8 @@ def test_queue_single_partition_only_feeds_final_aggregates(spark, sf_dir):
 
 
 def test_queue_allowlist_mirrored_in_registry_sweep():
-    """The queue's one bounded-domain window exception must already be
-    present in the registry-wide allowlist, so activation cannot turn
-    a green queue into a red registry sweep."""
+    """The module's one bounded-domain window exception must also be in
+    the registry-wide allowlist, so the two sweeps agree."""
     from tests.test_plans import SINGLE_PARTITION_ALLOWLIST
 
     assert QUEUE_SP_ALLOWLIST <= SINGLE_PARTITION_ALLOWLIST
@@ -123,7 +106,7 @@ def test_queue_no_cartesian_products(spark, sf_dir):
     from mysql_public_data_ingestor_spark.plans import assert_no_cartesian
 
     offenders = []
-    for name, fn, _oracle, _doc in roundeleven.QUEUE:
+    for name, fn, _oracle, _doc in QUERIES:
         try:
             assert_no_cartesian(fn(spark, sf_dir))
         except AssertionError:
@@ -132,38 +115,40 @@ def test_queue_no_cartesian_products(spark, sf_dir):
 
 
 def test_activate_registers_cleanly_in_subprocess():
-    """Prove now — in a subprocess, so the live registry stays clean —
-    that round-11 activation will register every queued name without
-    collisions."""
+    """In a fresh interpreter — so the live registry stays clean — import
+    roundeleven.py on its own before the registry loads: every one of its
+    queries must register through @register exactly once (a second
+    registration would raise a duplicate-name error), each with its
+    oracle, and the set must match the one this process sees."""
+    import json
+    import os
     import subprocess
     import sys
 
     code = (
-        "from mysql_public_data_ingestor_spark import registry\n"
-        "registry._ensure_loaded()\n"
+        "import json\n"
         "from mysql_public_data_ingestor_spark.operators import roundeleven\n"
-        "roundeleven.activate()\n"
-        "roundeleven.activate()\n"  # idempotent
-        "names = set(registry._REGISTRY)\n"
-        "queued = {n for n, *_ in roundeleven.QUEUE}\n"
-        "missing = queued - names\n"
-        "assert not missing, f'not registered: {missing}'\n"
-        "no_oracle = {n for n in queued if registry._REGISTRY[n].oracle is None}\n"
+        "from mysql_public_data_ingestor_spark import registry\n"
+        "specs = [s for s in registry.all_queries().values()\n"
+        "         if s.fn.__module__ == roundeleven.__name__]\n"
+        "no_oracle = [s.name for s in specs if s.oracle is None]\n"
         "assert not no_oracle, f'registered without oracle: {no_oracle}'\n"
-        "print('OK')\n"
+        "print(json.dumps(sorted(s.name for s in specs)))\n"
     )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     out = subprocess.run(
-        [sys.executable, "-c", code], capture_output=True, text=True, cwd="/root/repo"
+        [sys.executable, "-c", code], capture_output=True, text=True, cwd=root
     )
     assert out.returncode == 0, out.stderr[-2000:]
-    assert "OK" in out.stdout
+    registered = json.loads(out.stdout.strip().splitlines()[-1])
+    assert registered == sorted(name for name, *_ in QUERIES)
 
 
 # --- Python replicas ------------------------------------------------------
 
 
 def _q(name, spark, sf_dir):
-    fn = {n: f for n, f, *_ in roundeleven.QUEUE}[name]
+    fn = all_queries()[name].fn
     return fn(spark, sf_dir).toPandas()
 
 

@@ -38,7 +38,7 @@ def _q(name, spark, sf_dir):
 
 def _halfup_int(num: int, den: int) -> int:
     """Signed half-up integer division (den > 0) — the twin of
-    roundeleven._halfup_div used across the replicas."""
+    functions.exact.halfup_div used across the replicas."""
     mag = (2 * abs(num) + den) // (2 * den)
     return -mag if num < 0 else mag
 
@@ -51,16 +51,6 @@ def test_batch_registered_with_oracles():
     assert not missing, f"not registered: {missing}"
     no_oracle = [n for n in NAMES if registry._REGISTRY[n].oracle is None]
     assert no_oracle == [], f"registered without oracle: {no_oracle}"
-
-
-def test_batch_heads_driver_window():
-    from mysql_public_data_ingestor_spark import registry
-
-    hash_verified, _rows = registry._verified_names()
-    unverified = [n for n in NAMES if n not in hash_verified]
-    window = list(registry.all_queries())[:50]
-    stranded = set(unverified) - set(window)
-    assert not stranded, f"unverified batch names outside the 50-slot window: {stranded}"
 
 
 @pytest.mark.parametrize("name", NAMES)

@@ -1,5 +1,5 @@
 """Round-11 direct batch F gate (``operators/roundeleven7.py``):
-raw-frame oracle parity, plan bars, window-budget invariants, and an
+raw-frame oracle parity, plan bars, and an
 independent Python replica with a float anchor for the Breusch–Pagan
 heteroscedasticity test.
 """
@@ -7,8 +7,6 @@ heteroscedasticity test.
 from __future__ import annotations
 
 from collections import defaultdict
-
-import pytest
 
 from mysql_public_data_ingestor_spark.operators import roundeleven7 as r117
 from mysql_public_data_ingestor_spark.tables import Tables
@@ -32,42 +30,6 @@ def _halfup_int(num: int, den: int) -> int:
 def test_registered_with_oracle():
     spec = _spec(NAME)
     assert spec.oracle is not None
-
-
-def test_heads_driver_window():
-    from mysql_public_data_ingestor_spark import registry
-
-    hash_verified, _rows = registry._verified_names()
-    if NAME in hash_verified:
-        pytest.skip("already externally verified")
-    window = list(registry.all_queries())[:50]
-    assert NAME in window, "unverified batch-F name outside the 50-slot window"
-
-
-def test_window_budget_holds():
-    """Round-11 registration budget, reshaped at round 12 to the
-    roundten3 self-expiring pattern (the VERDICT r10 item-1 rule):
-    the LIVE invariant — every currently-unverified name fits the
-    50-slot window — must hold under any evidence state, while the
-    HISTORICAL snapshot (batch F entered the round-11 window) pins
-    evidence at r10 so neither later success nor later registrations
-    can redden it."""
-    from mysql_public_data_ingestor_spark import registry
-
-    hash_verified, rows_verified = registry._verified_names()
-    specs = registry.all_queries()
-    unverified = [
-        n
-        for n in specs
-        if n not in hash_verified
-        and not (specs[n].oracle is None and n in rows_verified)
-    ]
-    assert len(unverified) <= 50, f"window overflow: {len(unverified)} unverified"
-    window = set(list(specs)[:50])
-    assert not set(unverified) - window
-
-    h10, r10 = registry._verified_names(max_round=10)
-    assert NAME not in h10 and NAME not in r10
 
 
 def test_query_matches_oracle(spark, sf_dir):

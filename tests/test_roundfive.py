@@ -1,7 +1,6 @@
 """Round-5 batch gate: every operator in ``operators/roundfive.py``
-must pass the SAME canon/compare the driver's correctness gate uses,
-and — now that round 5 activated the queue — must be REGISTERED with
-its oracle and sit at the front of the driver's evaluation window.
+must pass the SAME canon/compare tools/check_correctness.py uses
+and meet the registry-wide plan bars.
 """
 
 from __future__ import annotations
@@ -9,43 +8,31 @@ from __future__ import annotations
 import pytest
 
 from mysql_public_data_ingestor_spark.operators import roundfive
+from mysql_public_data_ingestor_spark.registry import all_queries
 from tools.check_correctness import canon, compare, duck_connection
+
+# (name, fn, oracle, doc) of every query the module registers
+QUERIES = [
+    (s.name, s.fn, s.oracle, s.doc)
+    for s in all_queries().values()
+    if s.fn.__module__ == roundfive.__name__
+]
 
 
 def test_queue_is_registered_with_oracles():
-    """Activation contract (VERDICT r4 item 1): all 23 batch names are
-    live registry entries, each carrying its oracle, and a repeat
-    activate() is a no-op rather than a duplicate-name error."""
-    from mysql_public_data_ingestor_spark import registry
+    """All 23 roundfive.py queries reach ``__spark_entry__.oracle_sql()``, each with
+    its oracle."""
+    import __spark_entry__ as entry
 
-    registry._ensure_loaded()
-    queued = {name for name, *_ in roundfive.QUEUE}
-    assert queued, "queue unexpectedly empty"
-    missing = queued - set(registry._REGISTRY)
-    assert not missing, f"queued names not registered: {missing}"
-    no_oracle = {n for n in queued if registry._REGISTRY[n].oracle is None}
-    assert not no_oracle, f"registered without oracle: {no_oracle}"
-    roundfive.activate()  # idempotent — must not raise
-
-
-def test_queue_heads_driver_window():
-    """The never-driver-verified batch must occupy the head of the
-    evaluation order so the round-5 window covers it (evidence-relative:
-    once CORRECTNESS_r05 lands with green rows, these names retire from
-    the head and this asserts nothing about their position)."""
-    from mysql_public_data_ingestor_spark import registry
-
-    hash_verified, _rows = registry._verified_names()
-    queued = [name for name, *_ in roundfive.QUEUE]
-    unverified = [n for n in queued if n not in hash_verified]
-    window = list(registry.all_queries())[:50]
-    stranded = set(unverified) - set(window)
-    assert not stranded, f"unverified batch names outside the 50-slot window: {stranded}"
+    names = {name for name, *_ in QUERIES}
+    assert len(names) == 23
+    missing = names - set(entry.oracle_sql())
+    assert not missing, f"registered without oracle: {missing}"
 
 
 def test_queue_entries_well_formed():
     seen = set()
-    for name, fn, oracle, doc in roundfive.QUEUE:
+    for name, fn, oracle, doc in QUERIES:
         assert name not in seen, f"duplicate queue name {name}"
         seen.add(name)
         assert callable(fn)
@@ -54,7 +41,7 @@ def test_queue_entries_well_formed():
 
 
 @pytest.mark.parametrize(
-    "entry", roundfive.QUEUE, ids=[name for name, *_ in roundfive.QUEUE]
+    "entry", QUERIES, ids=[name for name, *_ in QUERIES]
 )
 def test_queued_query_matches_oracle(spark, sf_dir, entry):
     name, fn, oracle, _doc = entry
@@ -68,8 +55,7 @@ def test_queued_query_matches_oracle(spark, sf_dir, entry):
     assert not problems, f"{name}: {problems}"
 
 
-# Queued ops must meet the same scale bar as the registry BEFORE
-# activation — replicate the registry-wide plan sweeps over the queue.
+# Per-module twins of the registry-wide plan sweeps in test_plans.py.
 
 # agg_topk_mergeable: the global re-rank window runs over the merged
 # per-shard partials (<= shards*k = 80 rows by construction) — a
@@ -100,7 +86,7 @@ def test_queue_single_partition_only_feeds_final_aggregates(spark, sf_dir):
     from mysql_public_data_ingestor_spark.plans import physical_plan
 
     offenders = {}
-    for name, fn, _oracle, _doc in roundfive.QUEUE:
+    for name, fn, _oracle, _doc in QUERIES:
         if name in QUEUE_SP_ALLOWLIST:
             continue
         plan = physical_plan(fn(spark, sf_dir))
@@ -118,7 +104,7 @@ def test_queue_no_cartesian_products(spark, sf_dir):
     from mysql_public_data_ingestor_spark.plans import assert_no_cartesian
 
     offenders = []
-    for name, fn, _oracle, _doc in roundfive.QUEUE:
+    for name, fn, _oracle, _doc in QUERIES:
         try:
             assert_no_cartesian(fn(spark, sf_dir))
         except AssertionError:
@@ -127,28 +113,30 @@ def test_queue_no_cartesian_products(spark, sf_dir):
 
 
 def test_activate_registers_cleanly_in_subprocess():
-    """Round 5 flips the queue on via roundfive.activate(); prove now —
-    in a subprocess, so the live registry stays clean — that activation
-    registers every queued name without collisions and that the
-    evaluation-order machinery still works afterward."""
+    """In a fresh interpreter — so the live registry stays clean — import
+    roundfive.py on its own before the registry loads: every one of its
+    queries must register through @register exactly once (a second
+    registration would raise a duplicate-name error), each with its
+    oracle, and the set must match the one this process sees."""
+    import json
+    import os
     import subprocess
     import sys
 
     code = (
+        "import json\n"
         "from mysql_public_data_ingestor_spark.operators import roundfive\n"
         "from mysql_public_data_ingestor_spark import registry\n"
-        "registry._ensure_loaded()\n"
-        "roundfive.activate()\n"
-        "names = set(registry.all_queries())\n"
-        "queued = {n for n, *_ in roundfive.QUEUE}\n"
-        "missing = queued - names\n"
-        "assert not missing, f'not registered: {missing}'\n"
-        "oracles = registry.oracle_sql()\n"
-        "assert queued <= set(oracles), 'queued op lost its oracle'\n"
-        "print('ACTIVATED', len(queued))\n"
+        "specs = [s for s in registry.all_queries().values()\n"
+        "         if s.fn.__module__ == roundfive.__name__]\n"
+        "no_oracle = [s.name for s in specs if s.oracle is None]\n"
+        "assert not no_oracle, f'registered without oracle: {no_oracle}'\n"
+        "print(json.dumps(sorted(s.name for s in specs)))\n"
     )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     out = subprocess.run(
-        [sys.executable, "-c", code], capture_output=True, text=True, cwd="/root/repo"
+        [sys.executable, "-c", code], capture_output=True, text=True, cwd=root
     )
     assert out.returncode == 0, out.stderr[-2000:]
-    assert "ACTIVATED" in out.stdout
+    registered = json.loads(out.stdout.strip().splitlines()[-1])
+    assert registered == sorted(name for name, *_ in QUERIES)

@@ -1,9 +1,8 @@
-"""Round-14 banked queue gate (``operators/roundfourteen.py``):
-queue isolation (banked, NOT registered — activation is round 14's
-move), raw-frame oracle parity at the fixture SF, plan bars, and
-independent Python replicas with float anchors for the six ops
-(spectral flatness, shard-top-k coverage, strength assortativity,
-Whipple heaping, Parkinson volatility, hapax growth).
+"""Round-14 batch 1 gate (``operators/roundfourteen.py``): raw-frame
+oracle parity at the fixture SF, plan bars, and independent Python
+replicas with float anchors for the six ops (spectral flatness,
+shard-top-k coverage, strength assortativity, Whipple heaping,
+Parkinson volatility, hapax growth).
 """
 
 from __future__ import annotations
@@ -17,8 +16,16 @@ from itertools import combinations
 import pytest
 
 from mysql_public_data_ingestor_spark.operators import roundfourteen as r14
+from mysql_public_data_ingestor_spark.registry import all_queries
 from mysql_public_data_ingestor_spark.tables import Tables
 from tools.check_correctness import compare, duck_connection
+
+# (name, fn, oracle, doc) of every query the module registers
+QUERIES = [
+    (s.name, s.fn, s.oracle, s.doc)
+    for s in all_queries().values()
+    if s.fn.__module__ == r14.__name__
+]
 
 
 def _halfup_int(num: int, den: int) -> int:
@@ -26,29 +33,9 @@ def _halfup_int(num: int, den: int) -> int:
     return -mag if num < 0 else mag
 
 
-def test_queue_is_activated_and_inside_window():
-    """Activation contract (round 14, VERDICT r13 item 3): all 6
-    banked names in this module are registered, and every one still
-    lacking external evidence sits inside the 50-slot driver window
-    (no stranded queries). Evidence-relative, so the test stays green
-    after the window rotates."""
-    from mysql_public_data_ingestor_spark import registry
-
-    queued = {name for name, *_ in r14.QUEUE}
-    assert len(queued) == 6
-    qs = list(registry.all_queries())
-    missing = queued - set(qs)
-    assert not missing, f"queued names not registered: {missing}"
-    hash_verified, _rows = registry._verified_names()
-    unverified = [n_ for n_ in queued if n_ not in hash_verified]
-    window = set(qs[:50])
-    stranded = set(unverified) - window
-    assert not stranded, f"unverified batch names outside the window: {stranded}"
-
-
 def test_queue_entries_well_formed():
     seen = set()
-    for name, fn, oracle, doc in r14.QUEUE:
+    for name, fn, oracle, doc in QUERIES:
         assert name not in seen, f"duplicate queue name {name}"
         seen.add(name)
         assert callable(fn)
@@ -57,7 +44,7 @@ def test_queue_entries_well_formed():
 
 
 @pytest.mark.parametrize(
-    "entry", r14.QUEUE, ids=[name for name, *_ in r14.QUEUE]
+    "entry", QUERIES, ids=[name for name, *_ in QUERIES]
 )
 def test_queued_query_matches_oracle(spark, sf_dir, entry):
     name, fn, oracle, _doc = entry
@@ -72,7 +59,7 @@ def test_queued_query_matches_oracle(spark, sf_dir, entry):
 
 
 @pytest.mark.parametrize(
-    "entry", r14.QUEUE, ids=[name for name, *_ in r14.QUEUE]
+    "entry", QUERIES, ids=[name for name, *_ in QUERIES]
 )
 def test_queue_plan_bars(spark, sf_dir, entry):
     from mysql_public_data_ingestor_spark.plans import assert_no_cartesian
@@ -82,7 +69,7 @@ def test_queue_plan_bars(spark, sf_dir, entry):
 
 
 def _q(name):
-    return next(fn for n, fn, *_ in r14.QUEUE if n == name)
+    return all_queries()[name].fn
 
 
 # ---------------------------------------------------------------------------

@@ -1,8 +1,7 @@
-"""Round-14 banked queue batch 2 gate (``operators/roundfourteen2.py``):
-queue isolation, raw-frame oracle parity, plan bars, and independent
-Python replicas with float anchors for the four ops (Otsu threshold,
-quantile shift function, nation rank stability, Count-Min error
-profile).
+"""Round-14 batch 2 gate (``operators/roundfourteen2.py``): raw-frame
+oracle parity, plan bars, and independent Python replicas with float
+anchors for the four ops (Otsu threshold, quantile shift function,
+nation rank stability, Count-Min error profile).
 """
 
 from __future__ import annotations
@@ -13,8 +12,16 @@ from collections import Counter, defaultdict
 import pytest
 
 from mysql_public_data_ingestor_spark.operators import roundfourteen2 as r142
+from mysql_public_data_ingestor_spark.registry import all_queries
 from mysql_public_data_ingestor_spark.tables import Tables
 from tools.check_correctness import compare, duck_connection
+
+# (name, fn, oracle, doc) of every query the module registers
+QUERIES = [
+    (s.name, s.fn, s.oracle, s.doc)
+    for s in all_queries().values()
+    if s.fn.__module__ == r142.__name__
+]
 
 
 def _halfup_int(num: int, den: int) -> int:
@@ -22,26 +29,9 @@ def _halfup_int(num: int, den: int) -> int:
     return -mag if num < 0 else mag
 
 
-def test_queue_is_activated_and_inside_window():
-    """Activation contract (round 14, VERDICT r13 item 3) — see
-    test_roundfourteen.py for the full rationale."""
-    from mysql_public_data_ingestor_spark import registry
-
-    queued = {name for name, *_ in r142.QUEUE}
-    assert len(queued) == 4
-    qs = list(registry.all_queries())
-    missing = queued - set(qs)
-    assert not missing, f"queued names not registered: {missing}"
-    hash_verified, _rows = registry._verified_names()
-    unverified = [n_ for n_ in queued if n_ not in hash_verified]
-    window = set(qs[:50])
-    stranded = set(unverified) - window
-    assert not stranded, f"unverified batch names outside the window: {stranded}"
-
-
 def test_queue_entries_well_formed():
     seen = set()
-    for name, fn, oracle, doc in r142.QUEUE:
+    for name, fn, oracle, doc in QUERIES:
         assert name not in seen, f"duplicate queue name {name}"
         seen.add(name)
         assert callable(fn)
@@ -50,7 +40,7 @@ def test_queue_entries_well_formed():
 
 
 @pytest.mark.parametrize(
-    "entry", r142.QUEUE, ids=[name for name, *_ in r142.QUEUE]
+    "entry", QUERIES, ids=[name for name, *_ in QUERIES]
 )
 def test_queued_query_matches_oracle(spark, sf_dir, entry):
     name, fn, oracle, _doc = entry
@@ -65,7 +55,7 @@ def test_queued_query_matches_oracle(spark, sf_dir, entry):
 
 
 @pytest.mark.parametrize(
-    "entry", r142.QUEUE, ids=[name for name, *_ in r142.QUEUE]
+    "entry", QUERIES, ids=[name for name, *_ in QUERIES]
 )
 def test_queue_plan_bars(spark, sf_dir, entry):
     from mysql_public_data_ingestor_spark.plans import assert_no_cartesian
@@ -75,7 +65,7 @@ def test_queue_plan_bars(spark, sf_dir, entry):
 
 
 def _q(name):
-    return next(fn for n, fn, *_ in r142.QUEUE if n == name)
+    return all_queries()[name].fn
 
 
 # ---------------------------------------------------------------------------

@@ -1,8 +1,6 @@
-"""Round-9 banked-queue gate: every operator in
-``operators/roundnine.py`` must pass the SAME canon/compare the
-driver's correctness gate uses and meet the registry-wide plan bars
-NOW — activation in round 9 is then a pure registration flip, exactly
-the round-4/5 pattern (``operators/roundfive.py``).
+"""Round-9 batch A gate: every operator in ``operators/roundnine.py``
+must pass the SAME canon/compare tools/check_correctness.py uses
+and meet the registry-wide plan bars.
 """
 
 from __future__ import annotations
@@ -10,57 +8,31 @@ from __future__ import annotations
 import pytest
 
 from mysql_public_data_ingestor_spark.operators import roundnine
+from mysql_public_data_ingestor_spark.registry import all_queries
 from tools.check_correctness import compare, duck_connection
+
+# (name, fn, oracle, doc) of every query the module registers
+QUERIES = [
+    (s.name, s.fn, s.oracle, s.doc)
+    for s in all_queries().values()
+    if s.fn.__module__ == roundnine.__name__
+]
 
 
 def test_queue_is_registered_with_oracles():
-    """Activation contract (VERDICT r8 item 1): all 22 queue names are
-    live registry entries, each carrying its oracle, and a repeat
-    activate() is a no-op rather than a duplicate-name error."""
-    from mysql_public_data_ingestor_spark import registry
+    """All 22 roundnine.py queries reach ``__spark_entry__.oracle_sql()``, each with
+    its oracle."""
+    import __spark_entry__ as entry
 
-    registry._ensure_loaded()
-    queued = {name for name, *_ in roundnine.QUEUE}
-    assert queued, "queue unexpectedly empty"
-    missing = queued - set(registry._REGISTRY)
-    assert not missing, f"queued names not registered: {missing}"
-    no_oracle = {n for n in queued if registry._REGISTRY[n].oracle is None}
-    assert not no_oracle, f"registered without oracle: {no_oracle}"
-    roundnine.activate()  # idempotent — must not raise
-
-
-def test_window_budget_holds_round9():
-    """1 (recall-audit truth-side re-verify) + 22 (queue activation)
-    + new round-9 registrations <= 50 — everything unverified stays
-    inside the driver's evaluation window."""
-    from mysql_public_data_ingestor_spark import registry
-
-    names = list(registry.all_queries().keys())
-    hv, rv = registry._verified_names()
-    unverified = [n for n in names if n not in hv and n not in rv]
-    assert len(unverified) <= 50, len(unverified)
-    head = set(names[:50])
-    assert set(unverified) <= head
-
-
-def test_queue_heads_driver_window():
-    """The never-driver-verified batch must occupy the head of the
-    evaluation order so the round-9 window covers it (evidence-relative:
-    once CORRECTNESS_r09 lands with green rows, these names retire from
-    the head and this asserts nothing about their position)."""
-    from mysql_public_data_ingestor_spark import registry
-
-    hash_verified, _rows = registry._verified_names()
-    queued = [name for name, *_ in roundnine.QUEUE]
-    unverified = [n for n in queued if n not in hash_verified]
-    window = list(registry.all_queries())[:50]
-    stranded = set(unverified) - set(window)
-    assert not stranded, f"unverified batch names outside the 50-slot window: {stranded}"
+    names = {name for name, *_ in QUERIES}
+    assert len(names) == 22
+    missing = names - set(entry.oracle_sql())
+    assert not missing, f"registered without oracle: {missing}"
 
 
 def test_queue_entries_well_formed():
     seen = set()
-    for name, fn, oracle, doc in roundnine.QUEUE:
+    for name, fn, oracle, doc in QUERIES:
         assert name not in seen, f"duplicate queue name {name}"
         seen.add(name)
         assert callable(fn)
@@ -69,7 +41,7 @@ def test_queue_entries_well_formed():
 
 
 @pytest.mark.parametrize(
-    "entry", roundnine.QUEUE, ids=[name for name, *_ in roundnine.QUEUE]
+    "entry", QUERIES, ids=[name for name, *_ in QUERIES]
 )
 def test_queued_query_matches_oracle(spark, sf_dir, entry):
     # RAW frames into compare() (it canons internally): pre-canoning
@@ -87,8 +59,7 @@ def test_queued_query_matches_oracle(spark, sf_dir, entry):
     assert not problems, f"{name}: {problems}"
 
 
-# Queued ops must meet the same scale bar as the registry BEFORE
-# activation — replicate the registry-wide plan sweeps over the queue.
+# Per-module twins of the registry-wide plan sweeps in test_plans.py.
 #
 # stats_cvm_two_sample: the ordered ECDF pass runs over the POST-
 #   AGGREGATION <= 50-distinct-quantity domain, not rows.
@@ -141,7 +112,7 @@ def test_queue_single_partition_only_feeds_final_aggregates(spark, sf_dir):
     from mysql_public_data_ingestor_spark.plans import physical_plan
 
     offenders = {}
-    for name, fn, _oracle, _doc in roundnine.QUEUE:
+    for name, fn, _oracle, _doc in QUERIES:
         if name in QUEUE_SP_ALLOWLIST:
             continue
         plan = physical_plan(fn(spark, sf_dir))
@@ -159,7 +130,7 @@ def test_queue_no_cartesian_products(spark, sf_dir):
     from mysql_public_data_ingestor_spark.plans import assert_no_cartesian
 
     offenders = []
-    for name, fn, _oracle, _doc in roundnine.QUEUE:
+    for name, fn, _oracle, _doc in QUERIES:
         try:
             assert_no_cartesian(fn(spark, sf_dir))
         except AssertionError:
@@ -168,28 +139,30 @@ def test_queue_no_cartesian_products(spark, sf_dir):
 
 
 def test_activate_registers_cleanly_in_subprocess():
-    """Prove now — in a subprocess, so the live registry stays clean —
-    that round-9 activation will register every queued name without
-    collisions and the window machinery still orders them first."""
+    """In a fresh interpreter — so the live registry stays clean — import
+    roundnine.py on its own before the registry loads: every one of its
+    queries must register through @register exactly once (a second
+    registration would raise a duplicate-name error), each with its
+    oracle, and the set must match the one this process sees."""
+    import json
+    import os
     import subprocess
     import sys
 
     code = (
-        "from mysql_public_data_ingestor_spark import registry\n"
-        "registry._ensure_loaded()\n"
+        "import json\n"
         "from mysql_public_data_ingestor_spark.operators import roundnine\n"
-        "roundnine.activate()\n"
-        "roundnine.activate()\n"  # idempotent
-        "names = set(registry._REGISTRY)\n"
-        "queued = {n for n, *_ in roundnine.QUEUE}\n"
-        "missing = queued - names\n"
-        "assert not missing, f'not registered: {missing}'\n"
-        "no_oracle = {n for n in queued if registry._REGISTRY[n].oracle is None}\n"
+        "from mysql_public_data_ingestor_spark import registry\n"
+        "specs = [s for s in registry.all_queries().values()\n"
+        "         if s.fn.__module__ == roundnine.__name__]\n"
+        "no_oracle = [s.name for s in specs if s.oracle is None]\n"
         "assert not no_oracle, f'registered without oracle: {no_oracle}'\n"
-        "print('OK')\n"
+        "print(json.dumps(sorted(s.name for s in specs)))\n"
     )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     out = subprocess.run(
-        [sys.executable, "-c", code], capture_output=True, text=True, cwd="/root/repo"
+        [sys.executable, "-c", code], capture_output=True, text=True, cwd=root
     )
     assert out.returncode == 0, out.stderr[-2000:]
-    assert "OK" in out.stdout
+    registered = json.loads(out.stdout.strip().splitlines()[-1])
+    assert registered == sorted(name for name, *_ in QUERIES)

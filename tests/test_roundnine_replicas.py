@@ -1,9 +1,8 @@
-"""Independent Python replicas for the round-9 banked queue — same
+"""Independent Python replicas for ``operators/roundnine.py`` — same
 pattern as tests/test_roundeight3.py: the oracle gate in
 tests/test_roundnine.py proves cross-engine agreement; these recompute
 each statistic from the raw parquet with straight-line Python and must
-match exactly at the operator's own quantization, so activation in
-round 9 ships with the full evidence set already in place.
+match exactly at the operator's own quantization.
 """
 
 from __future__ import annotations
@@ -16,11 +15,12 @@ import pandas as pd
 import pytest
 
 from mysql_public_data_ingestor_spark.operators import roundnine
+from mysql_public_data_ingestor_spark.registry import all_queries
 from mysql_public_data_ingestor_spark.tables import Tables
 
 
 def _q(name, spark, sf_dir):
-    fn = {n: f for n, f, *_ in roundnine.QUEUE}[name]
+    fn = all_queries()[name].fn
     return fn(spark, sf_dir).toPandas()
 
 

@@ -53,16 +53,6 @@ def test_batch_registered_with_oracles():
     assert not no_oracle, f"registered without oracle: {no_oracle}"
 
 
-def test_batch_heads_driver_window():
-    from mysql_public_data_ingestor_spark import registry
-
-    hash_verified, _rows = registry._verified_names()
-    unverified = [n for n in NAMES if n not in hash_verified]
-    window = list(registry.all_queries())[:50]
-    stranded = set(unverified) - set(window)
-    assert not stranded, f"unverified batch names outside the 50-slot window: {stranded}"
-
-
 def _spec(name):
     from mysql_public_data_ingestor_spark import registry
 

@@ -42,16 +42,6 @@ def test_batch_registered_with_oracles():
     assert not no_oracle, f"registered without oracle: {no_oracle}"
 
 
-def test_batch_heads_driver_window():
-    from mysql_public_data_ingestor_spark import registry
-
-    hash_verified, _rows = registry._verified_names()
-    unverified = [n for n in NAMES if n not in hash_verified]
-    window = list(registry.all_queries())[:50]
-    stranded = set(unverified) - set(window)
-    assert not stranded, f"unverified batch names outside the 50-slot window: {stranded}"
-
-
 @pytest.mark.parametrize("name", NAMES)
 def test_query_matches_oracle(spark, sf_dir, name):
     spec = _spec(name)
@@ -474,15 +464,6 @@ def test_b6_registered_with_oracles():
     assert not [n for n in B6_NAMES if registry._REGISTRY[n].oracle is None]
 
 
-def test_b6_heads_driver_window():
-    from mysql_public_data_ingestor_spark import registry
-
-    hash_verified, _rows = registry._verified_names()
-    unverified = [n for n in B6_NAMES if n not in hash_verified]
-    window = list(registry.all_queries())[:50]
-    assert not set(unverified) - set(window)
-
-
 @pytest.mark.parametrize("name", B6_NAMES)
 def test_b6_query_matches_oracle(spark, sf_dir, name):
     spec = _spec(name)
@@ -739,35 +720,6 @@ def test_b7_registered_with_oracles():
     registry._ensure_loaded()
     assert not [n for n in B7_NAMES if n not in registry._REGISTRY]
     assert not [n for n in B7_NAMES if registry._REGISTRY[n].oracle is None]
-
-
-def test_b7_window_is_exactly_full():
-    """Round-10 registration budget (VERDICT r9 item 5): with evidence
-    capped at r09 — the state the round-10 window was composed against —
-    the 31 carried unverified + 19 new batch 5/6/7 names fill the
-    50-slot driver window, AND the live invariants hold regardless of
-    any evidence that lands later. Evidence is pinned via
-    ``_verified_names(max_round=9)`` so external verification success
-    can never redden this test (VERDICT r10 item 1)."""
-    from mysql_public_data_ingestor_spark import registry
-
-    # Live invariants: must hold under ANY future evidence state.
-    hash_verified, rows_verified = registry._verified_names()
-    ver = hash_verified | rows_verified
-    qs = list(registry.all_queries())
-    unverified = [n for n in qs if n not in ver]
-    assert len(unverified) <= 50, f"window overflow: {len(unverified)}"
-    window = qs[:50]
-    assert not set(unverified) - set(window)
-
-    # Historical snapshot: pinned to evidence <= r09, the round-10
-    # window was exactly the batch-5/6/7 names plus the 31 carryovers.
-    h9, r9 = registry._verified_names(max_round=9)
-    ver9 = h9 | r9
-    registered = list(registry._REGISTRY)
-    unverified_at_r10_start = [n for n in registered if n not in ver9]
-    for n in NAMES + B6_NAMES + B7_NAMES:
-        assert n in unverified_at_r10_start, n
 
 
 @pytest.mark.parametrize("name", B7_NAMES)

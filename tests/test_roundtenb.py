@@ -1,11 +1,7 @@
-"""Round-10 activation gate for ``operators/roundtenb.py`` (batch B,
-banked ungated at the end of round 9 — VERDICT r9 item 1): every
-operator must pass the SAME raw-frame compare the driver's
-correctness gate uses, meet the registry-wide plan bars, and match an
-independent Python replica. Activation happened in round 10
-(``registry._ensure_loaded`` calls ``roundtenb.activate()``) in the
-same commit that adds this file, so the bank's gate claim and the
-gates land together.
+"""Gate for ``operators/roundtenb.py`` (batch B): every operator must
+pass the SAME raw-frame compare tools/check_correctness.py uses,
+meet the registry-wide plan bars, and match an independent Python
+replica.
 """
 
 from __future__ import annotations
@@ -15,42 +11,31 @@ import math
 import pytest
 
 from mysql_public_data_ingestor_spark.operators import roundtenb
+from mysql_public_data_ingestor_spark.registry import all_queries
 from tools.check_correctness import compare, duck_connection
+
+# (name, fn, oracle, doc) of every query the module registers
+QUERIES = [
+    (s.name, s.fn, s.oracle, s.doc)
+    for s in all_queries().values()
+    if s.fn.__module__ == roundtenb.__name__
+]
 
 
 def test_queue_is_registered_with_oracles():
-    """Activation contract: all 6 batch names are live registry
-    entries, each carrying its oracle, and a repeat activate() is a
-    no-op rather than a duplicate-name error."""
-    from mysql_public_data_ingestor_spark import registry
+    """All 6 roundtenb.py queries reach ``__spark_entry__.oracle_sql()``, each with
+    its oracle."""
+    import __spark_entry__ as entry
 
-    registry._ensure_loaded()
-    queued = {name for name, *_ in roundtenb.QUEUE}
-    assert queued, "queue unexpectedly empty"
-    missing = queued - set(registry._REGISTRY)
-    assert not missing, f"queued names not registered: {missing}"
-    no_oracle = {n for n in queued if registry._REGISTRY[n].oracle is None}
-    assert not no_oracle, f"registered without oracle: {no_oracle}"
-    roundtenb.activate()  # idempotent — must not raise
-
-
-def test_queue_heads_driver_window():
-    """The never-driver-verified batch must sit inside the 50-slot
-    evaluation window (evidence-relative: retires once CORRECTNESS_r10
-    lands green)."""
-    from mysql_public_data_ingestor_spark import registry
-
-    hash_verified, _rows = registry._verified_names()
-    queued = [name for name, *_ in roundtenb.QUEUE]
-    unverified = [n for n in queued if n not in hash_verified]
-    window = list(registry.all_queries())[:50]
-    stranded = set(unverified) - set(window)
-    assert not stranded, f"unverified batch names outside the 50-slot window: {stranded}"
+    names = {name for name, *_ in QUERIES}
+    assert len(names) == 6
+    missing = names - set(entry.oracle_sql())
+    assert not missing, f"registered without oracle: {missing}"
 
 
 def test_queue_entries_well_formed():
     seen = set()
-    for name, fn, oracle, doc in roundtenb.QUEUE:
+    for name, fn, oracle, doc in QUERIES:
         assert name not in seen, f"duplicate queue name {name}"
         seen.add(name)
         assert callable(fn)
@@ -59,7 +44,7 @@ def test_queue_entries_well_formed():
 
 
 @pytest.mark.parametrize(
-    "entry", roundtenb.QUEUE, ids=[name for name, *_ in roundtenb.QUEUE]
+    "entry", QUERIES, ids=[name for name, *_ in QUERIES]
 )
 def test_queued_query_matches_oracle(spark, sf_dir, entry):
     # RAW frames into compare() (it canons internally) — the round-9
@@ -108,7 +93,7 @@ def test_queue_single_partition_only_feeds_final_aggregates(spark, sf_dir):
     from mysql_public_data_ingestor_spark.plans import physical_plan
 
     offenders = {}
-    for name, fn, _oracle, _doc in roundtenb.QUEUE:
+    for name, fn, _oracle, _doc in QUERIES:
         if name in SP_ALLOWLIST:
             continue
         plan = physical_plan(fn(spark, sf_dir))
@@ -126,7 +111,7 @@ def test_queue_no_cartesian_products(spark, sf_dir):
     from mysql_public_data_ingestor_spark.plans import assert_no_cartesian
 
     offenders = []
-    for name, fn, _oracle, _doc in roundtenb.QUEUE:
+    for name, fn, _oracle, _doc in QUERIES:
         try:
             assert_no_cartesian(fn(spark, sf_dir))
         except AssertionError:
@@ -138,7 +123,7 @@ def test_queue_no_cartesian_products(spark, sf_dir):
 
 
 def _q(name, spark, sf_dir):
-    fn = {n: f for n, f, *_ in roundtenb.QUEUE}[name]
+    fn = all_queries()[name].fn
     return fn(spark, sf_dir).toPandas()
 
 

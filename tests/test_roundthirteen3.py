@@ -1,6 +1,6 @@
-"""Round-13 bank batch R gate (``operators/roundthirteen3.py``):
-isolation, raw-frame oracle parity at sf0.001, plan bars, and Python
-replicas with float anchors.
+"""Round-13 batch R gate (``operators/roundthirteen3.py``): raw-frame
+oracle parity at sf0.001, plan bars, and Python replicas with float
+anchors.
 """
 
 from __future__ import annotations
@@ -13,8 +13,16 @@ from collections import Counter, defaultdict
 import pytest
 
 from mysql_public_data_ingestor_spark.operators import roundthirteen3 as r133
+from mysql_public_data_ingestor_spark.registry import all_queries
 from mysql_public_data_ingestor_spark.tables import Tables
 from tools.check_correctness import compare, duck_connection
+
+# (name, fn, oracle, doc) of every query the module registers
+QUERIES = [
+    (s.name, s.fn, s.oracle, s.doc)
+    for s in all_queries().values()
+    if s.fn.__module__ == r133.__name__
+]
 
 
 def _halfup_int(num: int, den: int) -> int:
@@ -26,29 +34,9 @@ def _sha_i64(s: str) -> int:
     return int(hashlib.sha256(s.encode()).hexdigest()[:15], 16)
 
 
-def test_queue_is_activated_and_inside_window():
-    """Activation contract (round 13, VERDICT r12 item 1): all 5
-    banked names in this module are registered, and every one still
-    lacking external evidence sits inside the 50-slot driver window
-    (no stranded queries). Evidence-relative, so the test stays green
-    after the window rotates."""
-    from mysql_public_data_ingestor_spark import registry
-
-    queued = {name for name, *_ in r133.QUEUE}
-    assert len(queued) == 5
-    qs = list(registry.all_queries())
-    missing = queued - set(qs)
-    assert not missing, f"queued names not registered: {missing}"
-    hash_verified, _rows = registry._verified_names()
-    unverified = [n_ for n_ in queued if n_ not in hash_verified]
-    window = set(qs[:50])
-    stranded = set(unverified) - window
-    assert not stranded, f"unverified batch names outside the window: {stranded}"
-
-
 def test_queue_entries_well_formed():
     seen = set()
-    for name, fn, oracle, doc in r133.QUEUE:
+    for name, fn, oracle, doc in QUERIES:
         assert name not in seen
         seen.add(name)
         assert callable(fn)
@@ -57,7 +45,7 @@ def test_queue_entries_well_formed():
 
 
 @pytest.mark.parametrize(
-    "entry", r133.QUEUE, ids=[name for name, *_ in r133.QUEUE]
+    "entry", QUERIES, ids=[name for name, *_ in QUERIES]
 )
 def test_queued_query_matches_oracle(spark, sf_dir, entry):
     name, fn, oracle, _doc = entry
@@ -72,7 +60,7 @@ def test_queued_query_matches_oracle(spark, sf_dir, entry):
 
 
 @pytest.mark.parametrize(
-    "entry", r133.QUEUE, ids=[name for name, *_ in r133.QUEUE]
+    "entry", QUERIES, ids=[name for name, *_ in QUERIES]
 )
 def test_plan_bars(spark, sf_dir, entry):
     from mysql_public_data_ingestor_spark.plans import assert_no_cartesian
@@ -87,7 +75,7 @@ def test_plan_bars(spark, sf_dir, entry):
 
 
 def _fn(name):
-    return next(fn for n, fn, *_ in r133.QUEUE if n == name)
+    return all_queries()[name].fn
 
 
 def _toks(text):

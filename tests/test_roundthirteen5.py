@@ -1,5 +1,5 @@
 """Round-13 direct batch T gate (``operators/roundthirteen5.py``):
-raw-frame oracle parity, plan bars, window-budget invariants, and
+raw-frame oracle parity, plan bars, and
 independent Python replicas with float anchors for the five ops
 (Barrat weighted clustering, eigenvector-centrality power iteration,
 PAV-block Brier decomposition, STL trend/seasonal strength, Kuiper
@@ -41,33 +41,6 @@ def _halfup_int(num: int, den: int) -> int:
 def test_registered_with_oracle():
     for name in NAMES:
         assert _spec(name).oracle is not None, name
-
-
-def test_window_budget_holds():
-    from mysql_public_data_ingestor_spark import registry
-
-    hash_verified, rows_verified = registry._verified_names()
-    specs = registry.all_queries()
-    unverified = [
-        n
-        for n in specs
-        if n not in hash_verified
-        and not (specs[n].oracle is None and n in rows_verified)
-    ]
-    assert len(unverified) <= 50, f"window overflow: {len(unverified)} unverified"
-    window = set(list(specs)[:50])
-    assert not set(unverified) - window
-    # the shared-derivation invalidation entry re-enters the window.
-    # Self-expiry (hardened per VERDICT r13 item 1): accept any of the
-    # three legitimate states — (a) entry pending, name unverified;
-    # (b) fresh hash-green evidence landed on disk (even if the inert
-    # entry has not yet been pruned); (c) entry pruned after evidence.
-    min_round = registry._EVIDENCE_MIN_ROUND.get("graph_weighted_triangles", 0)
-    assert (
-        "graph_weighted_triangles" in unverified
-        or "graph_weighted_triangles" in hash_verified
-        or min_round == 0
-    )
 
 
 @pytest.mark.parametrize("name", NAMES)

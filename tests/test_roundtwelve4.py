@@ -1,6 +1,5 @@
-"""Round-12 bank batch I gate (``operators/roundtwelve4.py``): queue
-isolation, raw-frame oracle parity, plan bars, and Python replicas with
-float anchors — all landed in the same commits as the bank.
+"""Round-12 batch I gate (``operators/roundtwelve4.py``): raw-frame
+oracle parity, plan bars, and Python replicas with float anchors.
 """
 
 from __future__ import annotations
@@ -11,8 +10,16 @@ from collections import Counter, defaultdict
 import pytest
 
 from mysql_public_data_ingestor_spark.operators import roundtwelve4 as r124
+from mysql_public_data_ingestor_spark.registry import all_queries
 from mysql_public_data_ingestor_spark.tables import Tables
 from tools.check_correctness import compare, duck_connection
+
+# (name, fn, oracle, doc) of every query the module registers
+QUERIES = [
+    (s.name, s.fn, s.oracle, s.doc)
+    for s in all_queries().values()
+    if s.fn.__module__ == r124.__name__
+]
 
 
 def _halfup_int(num: int, den: int) -> int:
@@ -24,29 +31,9 @@ def _sha_i64(s: str) -> int:
     return int(hashlib.sha256(s.encode()).hexdigest()[:15], 16)
 
 
-def test_queue_is_activated_and_inside_window():
-    """Activation contract (round 12, VERDICT r11 item 1): all 4
-    banked names in this module are registered, and every one still
-    lacking external evidence sits inside the 50-slot driver window
-    (no stranded queries). Evidence-relative, so the test stays green
-    after the window rotates."""
-    from mysql_public_data_ingestor_spark import registry
-
-    queued = {name for name, *_ in r124.QUEUE}
-    assert len(queued) == 4
-    qs = list(registry.all_queries())
-    missing = queued - set(qs)
-    assert not missing, f"queued names not registered: {missing}"
-    hash_verified, _rows = registry._verified_names()
-    unverified = [n_ for n_ in queued if n_ not in hash_verified]
-    window = set(qs[:50])
-    stranded = set(unverified) - window
-    assert not stranded, f"unverified batch names outside the window: {stranded}"
-
-
 def test_queue_entries_well_formed():
     seen = set()
-    for name, fn, oracle, doc in r124.QUEUE:
+    for name, fn, oracle, doc in QUERIES:
         assert name not in seen
         seen.add(name)
         assert callable(fn)
@@ -55,10 +42,11 @@ def test_queue_entries_well_formed():
 
 
 def _spec(name):
-    return {n: (f, o) for n, f, o, _ in r124.QUEUE}[name]
+    spec = all_queries()[name]
+    return spec.fn, spec.oracle
 
 
-@pytest.mark.parametrize("name", [n for n, *_ in r124.QUEUE])
+@pytest.mark.parametrize("name", [n for n, *_ in QUERIES])
 def test_query_matches_oracle(spark, sf_dir, name):
     fn, oracle = _spec(name)
     sdf = fn(spark, sf_dir).toPandas()
@@ -74,7 +62,7 @@ def test_query_matches_oracle(spark, sf_dir, name):
 def test_queue_plan_bars(spark, sf_dir):
     from mysql_public_data_ingestor_spark.plans import assert_no_cartesian
 
-    for name, fn, *_ in r124.QUEUE:
+    for name, fn, *_ in QUERIES:
         assert_no_cartesian(fn(spark, sf_dir))
 
 

@@ -1,5 +1,5 @@
 """Round-12 direct batch M gate (``operators/roundtwelve8.py``):
-raw-frame oracle parity, plan bars, window-budget invariants, and
+raw-frame oracle parity, plan bars, and
 independent Python replicas with float anchors for the five graph /
 text ops.
 """
@@ -39,41 +39,6 @@ def _halfup_int(num: int, den: int) -> int:
 def test_registered_with_oracle():
     for name in NAMES:
         assert _spec(name).oracle is not None, name
-
-
-def test_heads_driver_window():
-    from mysql_public_data_ingestor_spark import registry
-
-    hash_verified, _rows = registry._verified_names()
-    pending = [n for n in NAMES if n not in hash_verified]
-    if not pending:
-        pytest.skip("all batch-M names already externally verified")
-    window = set(list(registry.all_queries())[:50])
-    stranded = [n for n in pending if n not in window]
-    assert not stranded, f"batch-M names outside the 50-slot window: {stranded}"
-
-
-def test_window_budget_holds():
-    """Round-12 registration budget (the roundten3 self-expiring
-    pattern): live invariant under any evidence + historical snapshot
-    pinned at r11."""
-    from mysql_public_data_ingestor_spark import registry
-
-    hash_verified, rows_verified = registry._verified_names()
-    specs = registry.all_queries()
-    unverified = [
-        n
-        for n in specs
-        if n not in hash_verified
-        and not (specs[n].oracle is None and n in rows_verified)
-    ]
-    assert len(unverified) <= 50, f"window overflow: {len(unverified)} unverified"
-    window = set(list(specs)[:50])
-    assert not set(unverified) - window
-
-    h11, r11 = registry._verified_names(max_round=11)
-    for n in NAMES:
-        assert n not in h11 and n not in r11, n
 
 
 @pytest.mark.parametrize("name", NAMES)

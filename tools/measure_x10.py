@@ -79,12 +79,13 @@ PRESETS = {"round6": ROUND6, "round8": ROUND8, "round9queue": None}
 
 def main() -> int:
     out_path = sys.argv[1]
+    specs = all_queries()
     names: list[str] = []
     for a in sys.argv[2:]:
         if a == "@round9queue":
-            from mysql_public_data_ingestor_spark.operators import roundnine
-
-            names.extend(n for n, *_ in roundnine.QUEUE)
+            names.extend(
+                n for n, s in specs.items() if s.fn.__module__.endswith(".roundnine")
+            )
         elif a.startswith("@"):
             names.extend(PRESETS[a[1:]])
         else:
@@ -92,54 +93,6 @@ def main() -> int:
     base = os.environ.get("SPARK_GRAFT_BASE_SF", "/root/testdata/sf0.1")
     x10 = os.environ.get("SPARK_GRAFT_X10_SF", "/tmp/sf1.0")
     spark = get_spark("measure_x10")
-    specs = dict(all_queries())
-
-    class _QSpec:
-        def __init__(self, fn):
-            self.fn = fn
-
-    # banked-but-unregistered queue ops resolve by name too, so the
-    # pre-registration recipe is one command for queued ops
-    from mysql_public_data_ingestor_spark.operators import (
-        roundeleven,
-        roundnine,
-        roundten,
-        roundtwelve,
-        roundtwelve2,
-        roundtwelve3,
-        roundtwelve4,
-        roundtwelve5,
-        roundthirteen,
-        roundthirteen2,
-        roundthirteen3,
-        roundthirteen4,
-        roundfourteen,
-        roundfourteen2,
-        roundfourteen3,
-        roundfifteen,
-        roundfifteen2,
-    )
-
-    for qname, qfn, _oracle, _doc in [
-        *roundnine.QUEUE,
-        *roundten.QUEUE,
-        *roundeleven.QUEUE,
-        *roundtwelve.QUEUE,
-        *roundtwelve2.QUEUE,
-        *roundtwelve3.QUEUE,
-        *roundtwelve4.QUEUE,
-        *roundtwelve5.QUEUE,
-        *roundthirteen.QUEUE,
-        *roundthirteen2.QUEUE,
-        *roundthirteen3.QUEUE,
-        *roundthirteen4.QUEUE,
-        *roundfourteen.QUEUE,
-        *roundfourteen2.QUEUE,
-        *roundfourteen3.QUEUE,
-        *roundfifteen.QUEUE,
-        *roundfifteen2.QUEUE,
-    ]:
-        specs.setdefault(qname, _QSpec(qfn))
     missing = [n for n in names if n not in specs]
     if missing:
         print(f"unknown queries: {missing}", file=sys.stderr)
