@@ -1,7 +1,7 @@
 # Convenience targets (mirrors the reference's Makefile role:
 # build/test entry points — reference Makefile:26-46).
 
-.PHONY: test check check-fast check-fuzz check-fuzzu check-fuzzs check-fuzzc bench bench-ingest plans
+.PHONY: test check check-fast check-fuzz check-fuzzu check-fuzzs check-fuzzc bench bench-ingest perfbench-ingest plans
 
 test:
 	python -m pytest tests/ -x -q
@@ -33,6 +33,9 @@ bench:        ## headline-query benchmark at sf0.1 (one JSON line)
 
 bench-ingest: ## fan-out ingestion throughput
 	python tools/bench_ingest.py
+
+perfbench-ingest: ## ingest fan-out benchmark, end-to-end metrics (one seed)
+	python3 perfbench/run.py --workload ingest_fanout --seed 401 --seconds 10 --trace 0
 
 plans:        ## regenerate PLANS.md
 	python tools/dump_plans.py

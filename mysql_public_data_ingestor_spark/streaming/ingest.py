@@ -3,15 +3,18 @@ sink targets.
 
 Reference pipeline being re-expressed (SURVEY §3):
   - poll loop with interval + retry/backoff (main.go:101-127) ->
-    Structured Streaming trigger(processingTime=interval) driving the
-    source, plus bounded fetch retries inside the poller;
+    ``IngestEngine.run`` with bounded fetch retries, or Structured
+    Streaming ``trigger(processingTime=interval)`` driving the source;
   - broadcast distribute: every batch to every (db, table) channel
-    (main.go:129-158) -> ``foreachBatch`` writing the SAME persisted
-    DataFrame to every sink target — ``persist()`` is mandatory: without
-    it Spark recomputes (re-polls!) the source once per sink
-    (SURVEY §4, the one semantic trap);
-  - transactional insert per table (main.go:160-212) -> each sink write
-    is per-partition transactional (JDBC) or atomic-rename (parquet);
+    (main.go:129-158) -> the SAME DataFrame object handed to every sink
+    target. ``IngestEngine`` builds it from rows already polled into
+    the driver (a local relation), so no target can re-poll the source.
+    The ``foreachBatch`` variants persist the batch, because there a
+    sink that re-evaluates the frame would recompute (re-poll!) the
+    streaming source once per target (SURVEY §4, the one semantic trap);
+  - transactional insert per table (main.go:160-212) -> one partition
+    per batch, so each target gets one JDBC transaction or one
+    atomically committed parquet file per batch;
   - bounded demo run (main.go:49-50) -> ``run(duration_s=...)``.
 
 Backpressure is structural: micro-batch N+1 does not start until every
@@ -22,12 +25,12 @@ goroutines (main.go:152-154) cannot pile up here.
 from __future__ import annotations
 
 import time
+import weakref
 from dataclasses import dataclass, field
 from typing import Callable, Optional
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..logging_util import get_logger
 from ..sources.registry import SourcePlugin
@@ -39,13 +42,65 @@ log = get_logger("ingest")
 
 @dataclass
 class ParquetSink:
-    """Filesystem stand-in for the MySQL table sink (same fan-out
-    semantics, atomically committed per micro-batch)."""
+    """Filesystem stand-in for the MySQL table sink: each batch is
+    appended to ``<path>/<database>/<table>``.
+
+    A batch is encoded once, whatever the number of targets. The first
+    call with a given DataFrame object runs the Spark append and records
+    the ``part-*`` files it committed (the target directory listed
+    before and after the write). A later call with the *same* object
+    copies those files byte for byte into its own target instead of
+    running Spark again. The rule is: same DataFrame object => same
+    batch => same bytes in every target, which is stricter broadcast
+    semantics than re-evaluating the frame once per target. Each copy
+    is written under a hidden ``.``-prefixed name and then renamed, so
+    readers never see a torn file. Files go through the session's
+    Hadoop ``FileSystem``, so any URI Spark can write works. The sink
+    keeps only a weak reference to the last batch's DataFrame: it does
+    not keep a finished batch (and its rows in the JVM) alive, and a
+    later batch cannot be mistaken for it by a reused object id.
+    """
 
     path: str
+    _last_df: Optional[weakref.ref] = field(default=None, init=False, repr=False, compare=False)
+    _last_files: list = field(default_factory=list, init=False, repr=False, compare=False)
 
     def __call__(self, df: DataFrame, target) -> None:
-        df.write.mode("append").parquet(f"{self.path}/{target.database}/{target.table}")
+        jvm = df.sparkSession._jvm  # type: ignore[union-attr]
+        conf = df.sparkSession._jsc.hadoopConfiguration()  # type: ignore[union-attr]
+        hadoop = jvm.org.apache.hadoop.fs  # resolved once: each package hop is a py4j call
+        out = hadoop.Path(f"{self.path}/{target.database}/{target.table}")
+        fs = out.getFileSystem(conf)
+        if self._last_df is not None and self._last_df() is df:
+            for src in self._last_files:
+                name = src.rsplit("/", 1)[1]
+                tmp, dst = hadoop.Path(out, f".{name}.copying"), hadoop.Path(out, name)
+                if fs.exists(dst):
+                    raise FileExistsError(f"{dst.toString()} already holds this batch")
+                try:
+                    hadoop.FileUtil.copy(fs, hadoop.Path(src), fs, tmp, False, conf)
+                    if not fs.rename(tmp, dst):
+                        raise OSError(f"could not rename {tmp.toString()} to {dst.toString()}")
+                except BaseException:
+                    fs.delete(tmp, False)
+                    raise
+            return
+        self._last_df = None
+        before = _part_files(jvm, hadoop, fs, out)
+        df.write.mode("append").parquet(out.toString())
+        self._last_files = sorted(_part_files(jvm, hadoop, fs, out) - before)
+        self._last_df = weakref.ref(df)
+
+
+def _part_files(jvm, hadoop, fs, out) -> set[str]:
+    """Paths of the ``part-*`` files directly under ``out`` (none if it
+    does not exist), fetched with a constant number of py4j calls
+    however many batches the directory already holds."""
+    if not fs.exists(out):
+        return set()
+    paths = hadoop.FileUtil.stat2Paths(fs.listStatus(out))
+    listed = jvm.scala.collection.immutable.ArraySeq.unsafeWrapArray(paths).mkString("\n").split("\n")
+    return {p for p in listed if p.rsplit("/", 1)[1].startswith("part-")}
 
 
 @dataclass
@@ -61,7 +116,17 @@ class JdbcSink:
 
 @dataclass
 class IngestEngine:
-    """Drives plugin polls into a replicated fan-out of sink targets."""
+    """Drives plugin polls into a replicated fan-out of sink targets.
+
+    Partial sink failure: the targets are written in order, and a sink
+    that raises on target k of N stops the batch there. ``process_batch``
+    re-raises; ``batches_done`` and ``rows_done`` do not advance; targets
+    0..k-1 keep the batch (their writes already committed) and targets
+    k..N-1 do not get it. Nothing is rolled back, so handing the same
+    rows to ``process_batch`` again delivers them to every target and
+    targets 0..k-1 then hold them twice: delivery is at-least-once per
+    target. ``idempotent_fanout_query`` gives exactly-once.
+    """
 
     spark: SparkSession
     plugin: SourcePlugin
@@ -92,48 +157,27 @@ class IngestEngine:
                 self.sleep(self.retry_backoff_s)
 
     def process_batch(self, rows: list[tuple]) -> int:
-        """One micro-batch: rows -> DataFrame -> every sink target.
+        """One micro-batch: rows -> one single-partition DataFrame ->
+        every sink target, in order.
 
         An empty poll still counts as a completed batch (the loop's
         progress/bound accounting must advance or ``run(max_batches=N)``
         would spin forever on a quiet source)."""
-        if not rows:
-            self.batches_done += 1
-            return 0
-        # Arrow path: tuples -> pandas -> DataFrame is ~10x faster than
-        # row-at-a-time Python serialization for wide snapshot batches
-        import pandas as pd
+        if rows:
+            # Arrow path: tuples -> pandas -> DataFrame is ~10x faster than
+            # row-at-a-time Python serialization for wide snapshot batches
+            import pandas as pd
 
-        schema = self.plugin.schema()
-        pdf = pd.DataFrame(rows, columns=[f.name for f in schema.fields])
-        df = self.spark.createDataFrame(pdf, schema=schema)
-        # mandatory: one materialization shared by all sinks (else the
-        # source would be re-polled per sink — SURVEY §4 persist row).
-        # Batch accounting rides the first sink write via observe()
-        # instead of a separate count() action — one pass per batch,
-        # not two; the first write populates the cache AND the metric.
-        from pyspark.sql import Observation
-
-        obs = Observation()
-        df = df.observe(obs, F.count(F.lit(1)).alias("n"))
-        df = df.persist(StorageLevel.MEMORY_AND_DISK)
-        try:
+            schema = self.plugin.schema()
+            pdf = pd.DataFrame(rows, columns=[f.name for f in schema.fields])
+            # one partition: one file (or JDBC transaction) per target
+            df = self.spark.createDataFrame(pdf, schema=schema).coalesce(1)
             for target in self.targets:
                 self.sink(df, target)
-            if not self.targets:
-                # Observation.get blocks until an action runs over the
-                # observed frame; with zero sinks no action ever fires
-                # and obs.get would hang forever. Count directly (also
-                # warms the persisted cache for any later reader).
-                n = df.count()
-            else:
-                n = int(obs.get["n"])
-        finally:
-            df.unpersist()
         self.batches_done += 1
-        self.rows_done += n
-        log.info("batch %d: %d rows -> %d sinks", self.batches_done, n, len(self.targets))
-        return n
+        self.rows_done += len(rows)
+        log.info("batch %d: %d rows -> %d sinks", self.batches_done, len(rows), len(self.targets))
+        return len(rows)
 
     def run(self, duration_s: Optional[float] = None, max_batches: Optional[int] = None) -> None:
         """Poll loop with the plugin's interval (reference: main.go:101-127;

@@ -6,7 +6,11 @@ across all sinks (BASELINE.md §A: one 10^4-row snapshot per 60 s poll,
 8 sinks, row-at-a-time INSERTs). This measures the Spark engine's
 equivalent number.
 
-Usage: python tools/bench_ingest.py [rows_per_batch] [n_batches] [n_sinks]
+Usage: python tools/bench_ingest.py [rows_per_batch] [n_batches] [copies]
+
+``copies`` is the topology's replicated-database count; one extra
+database of 5 tables rides along, so ``copies`` = 3 (the default)
+gives 8 sink targets.
 """
 
 from __future__ import annotations
@@ -42,7 +46,7 @@ def synthetic_payload(n_rows: int) -> bytes:
 def main() -> None:
     rows_per_batch = int(sys.argv[1]) if len(sys.argv) > 1 else 10_000
     n_batches = int(sys.argv[2]) if len(sys.argv) > 2 else 5
-    n_sinks_copies = int(sys.argv[3]) if len(sys.argv) > 3 else 3
+    copies = int(sys.argv[3]) if len(sys.argv) > 3 else 3
 
     spark = get_spark("bench_ingest")
     payload = synthetic_payload(rows_per_batch)
@@ -53,7 +57,7 @@ def main() -> None:
 
     cfg = DatabasesConfig(
         prefix="bench_", table_prefix="flights",
-        copies=n_sinks_copies, extra={"x": ExtraDatabase(tables=5)},
+        copies=copies, extra={"x": ExtraDatabase(tables=5)},
     )
     targets = expand_topology(cfg)
     out = tempfile.mkdtemp(prefix="bench_ingest_")
