@@ -1,24 +1,44 @@
-"""Graph analytics over the part co-purchase graph.
+"""The part co-purchase graph: the tables and traversals every graph
+query shares.
 
 The graph: nodes are parts, an undirected edge links two parts that
 appear in the same order (the classic market-basket graph — the same
 shape as a near-dup document graph or a user-interaction graph).
-Derived on the fly from ``lineitem`` with one self-join on the order
-key, so the whole pipeline is declarative and Catalyst-optimized.
+
+This module is the only place that knows how the graph is built and
+walked; the queries live by domain next to it:
+
+- ``graph_structure``: degrees, triangles and clustering, cycles,
+  cores and trusses, bridges, assortativity, coverage audits;
+- ``graph_paths``: BFS, k-hop reach, eccentricity, diameter, harmonic
+  closeness, weighted SSSP, stress and betweenness;
+- ``graph_centrality``: PageRank, Katz, eigenvector, hub removal;
+- ``graph_community``: label propagation and its modularity;
+- ``graph_linkpred``: common neighbours, Jaccard, Adamic–Adar,
+  market-basket lift.
+
+Shared steps, one copy each:
+
+- ``edge_table`` / ``triangle_table`` / ``_wedges`` /
+  ``weighted_edge_table``: session-materialized warehouse tables;
+- ``adjacency``: both directions of an undirected edge list;
+- ``_degrees``: per-node degree;
+- ``frontier_bfs``: the synchronous frontier/visited BFS loop;
+- ``seed_layers`` / ``seed_hop``: exact-distance layers per seed.
 
 Scale notes (100 TB):
-- Edge construction self-joins lineitem on ``l_orderkey`` — a
-  co-partitioned equi-join (one shuffle each side on the order key);
-  per-order fanout is choose(items, 2) with items bounded by the order
-  size (~7 in TPC-H), so the edge set is linear in lineitem.
+- Edge construction groups lineitem by ``l_orderkey`` and generates
+  each order's pairs map-side; per-order fanout is choose(items, 2)
+  with items bounded by the order size (~7 in TPC-H), so the edge set
+  is linear in lineitem.
 - Triangle counting uses the degree-ordered orientation (each edge
   points from its lower-(degree, id) endpoint), which bounds every
   node's out-degree by O(sqrt(m)); the wedge join's fanout is then
   O(m^1.5) worst case instead of O(sum deg^2) — the standard
   MapReduce/graph-engine trick (Suri & Vassilvitskii, WWW'11).
-- Everything is equi-joins and aggregations: no cartesian products,
-  no driver-side iteration; wedge closure is a single equi-join on the
-  canonical (min, max) edge key.
+- Traversals are equi-joins and anti-joins bounded by the frontier or
+  the seed set, never all-pairs; the hop count is fixed, so the
+  driver-side loops are bounded.
 """
 
 from __future__ import annotations
@@ -26,7 +46,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..registry import register
+from ..functions.partitioning import gated_broadcast, iter_checkpoint
 from ..tables import Tables
 
 # Distinct undirected co-purchase edges with value-canonical endpoints
@@ -65,21 +85,14 @@ _SQL_TRI_CTES = _SQL_EDGES + """
 """
 
 
-def _edges(t: Tables) -> DataFrame:
-    """Distinct undirected edges (u < v) of the co-purchase graph.
-
-    One shuffle instead of a self-join: group each order's distinct
-    parts into a sorted array (``collect_set`` is bounded by order
-    size, ~7 for TPC-H), generate the within-order pairs map-side from
-    the array, then dedup edges. The self-join formulation shuffles
-    ``li`` twice more (distinct + join repartition) for the same rows.
-    """
+def _basket_pairs(li: DataFrame) -> DataFrame:
+    """Every within-order part pair (u < v), once per order that holds
+    both: each order's distinct parts grouped into a sorted array
+    (``collect_set`` is bounded by order size, ~7 for TPC-H), pairs
+    generated map-side from the array. ``li`` needs ``l_orderkey`` and
+    ``l_partkey``."""
     arr = F.sort_array(F.collect_set("l_partkey"))
-    baskets = (
-        t.lineitem.select("l_orderkey", "l_partkey")
-        .groupBy("l_orderkey")
-        .agg(arr.alias("parts"))
-    )
+    baskets = li.groupBy("l_orderkey").agg(arr.alias("parts"))
     # pairs (parts[i], parts[j]) for i < j; the two-arg lambda is
     # (element, index), and slice() is 1-based.
     pairs = F.flatten(
@@ -91,11 +104,19 @@ def _edges(t: Tables) -> DataFrame:
             ),
         )
     )
-    return (
-        baskets.select(F.explode(pairs).alias("e"))
-        .select(F.col("e.u").alias("u"), F.col("e.v").alias("v"))
-        .distinct()
+    return baskets.select(F.explode(pairs).alias("e")).select(
+        F.col("e.u").alias("u"), F.col("e.v").alias("v")
     )
+
+
+def _edges(t: Tables) -> DataFrame:
+    """Distinct undirected edges (u < v) of the co-purchase graph.
+
+    One shuffle instead of a self-join: the basket pairs are generated
+    map-side, then deduped. The self-join formulation shuffles ``li``
+    twice more (distinct + join repartition) for the same rows.
+    """
+    return _basket_pairs(t.lineitem.select("l_orderkey", "l_partkey")).distinct()
 
 
 def edge_table(spark: SparkSession, t: Tables, sf_dir: str) -> DataFrame:
@@ -134,8 +155,6 @@ def _oriented(edges: DataFrame) -> DataFrame:
     below the budget so the edge list never shuffles here, plain
     equi-join above it (VERDICT r7: a forced hint on a 100 TB edge
     list OOMs where the gate degrades to sort-merge)."""
-    from ..functions.partitioning import gated_broadcast
-
     deg = _degrees(edges)
     du = deg.select(F.col("node").alias("u"), F.col("degree").alias("du"))
     dv = deg.select(F.col("node").alias("v"), F.col("degree").alias("dv"))
@@ -161,8 +180,6 @@ def _triangles(edges: DataFrame) -> DataFrame:
     side is broadcast below the budget so the O(m^1.5) wedge stream is
     consumed map-side; above it the same plan degrades to a shuffle
     join on (lo, hi) — correct, one extra exchange."""
-    from ..functions.partitioning import gated_broadcast
-
     orient = _oriented(edges)
     e1 = orient.select("s", F.col("t").alias("t1"))
     e2 = orient.select("s", F.col("t").alias("t2"))
@@ -208,442 +225,145 @@ def triangle_table(spark: SparkSession, t: Tables, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "graph_degree_histogram",
-    oracle=_SQL_EDGES
-    + """
-    , deg AS (
-      SELECT node, count(*) AS degree
-      FROM (SELECT u AS node FROM edges UNION ALL SELECT v FROM edges)
-      GROUP BY node
-    )
-    SELECT degree, count(*) AS n_nodes
-    FROM deg GROUP BY degree
-    """,
-)
-def graph_degree_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Degree distribution of the co-purchase graph: for each degree,
-    how many parts have it.
-
-    The first question asked of any large graph (power-law check, hub
-    detection). Two aggregations after the edge build; the histogram is
-    at most max-degree rows, so the result is tiny regardless of input
-    scale.
-    """
-    t = Tables(spark, sf_dir)
-    return (
-        _degrees(edge_table(spark, t, sf_dir))
-        .groupBy("degree")
-        .agg(F.count(F.lit(1)).alias("n_nodes"))
-    )
-
-
-@register(
-    "graph_triangle_count",
-    oracle=_SQL_EDGES
-    + """
-    , deg AS (
-      SELECT node, count(*) AS degree
-      FROM (SELECT u AS node FROM edges UNION ALL SELECT v FROM edges)
-      GROUP BY node
-    ), orient AS (
-      -- each edge directed from its lower-(degree, id) endpoint
-      SELECT CASE WHEN (du.degree, e.u) < (dv.degree, e.v) THEN e.u ELSE e.v END AS s,
-             CASE WHEN (du.degree, e.u) < (dv.degree, e.v) THEN e.v ELSE e.u END AS t
-      FROM edges e
-      JOIN deg du ON du.node = e.u
-      JOIN deg dv ON dv.node = e.v
-    ), wedges AS (
-      SELECT e1.s AS apex,
-             least(e1.t, e2.t)    AS lo,
-             greatest(e1.t, e2.t) AS hi
-      FROM orient e1 JOIN orient e2
-        ON e1.s = e2.s AND e1.t < e2.t
-    ), tri AS (
-      SELECT count(*) AS n_triangles
-      FROM wedges w JOIN edges e ON w.lo = e.u AND w.hi = e.v
-    ), base AS (
-      SELECT (SELECT count(*) FROM deg)   AS n_nodes,
-             (SELECT count(*) FROM edges) AS n_edges,
-             (SELECT CAST(sum(CAST(degree AS HUGEINT) * (degree - 1)) // 2 AS BIGINT)
-              FROM deg) AS n_wedges
-    )
-    SELECT n_nodes, n_edges, n_wedges, n_triangles,
-           3.0 * n_triangles / n_wedges AS global_clustering
-    FROM base, tri
-    """,
-)
-def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact triangle count and global clustering coefficient of the
-    co-purchase graph, via degree-ordered wedge closure.
-
-    Each edge is oriented from its lower-(degree, id) endpoint, so
-    every triangle has exactly one apex with two out-edges — counted
-    once, and the wedge join's per-node fanout is bounded by the
-    orientation (out-degree <= O(sqrt(m))). Wedge closure is an
-    equi-join against the canonical (u < v) edge set — no OR-join, no
-    cartesian (see ``_triangles``; the enumeration itself is the
-    session-shared ``triangle_table``, so this query and the local
-    clustering ranking pay for it once between them).
-    ``global_clustering = 3 * triangles / wedges``.
-    """
-    t = Tables(spark, sf_dir)
-    edges = edge_table(spark, t, sf_dir)
-    deg = _degrees(edges)
-    tri = triangle_table(spark, t, sf_dir).agg(
-        F.count(F.lit(1)).alias("n_triangles")
-    )
-
-    base = deg.agg(
-        F.count(F.lit(1)).alias("n_nodes"),
-        # exact-integer wedge count: sum d*(d-1) in decimal(38,0) (a
-        # double sum loses exactness past 2^53 wedges; the sum is even,
-        # so the halving is exact), matching the oracle's HUGEINT // 2
-        (F.sum((F.col("degree").cast("decimal(38,0)")) * (F.col("degree") - 1)) / 2)
-        .cast("long")
-        .alias("n_wedges"),
-    ).crossJoin(F.broadcast(edges.agg(F.count(F.lit(1)).alias("n_edges"))))
-
-    return base.crossJoin(F.broadcast(tri)).select(
-        "n_nodes",
-        "n_edges",
-        "n_wedges",
-        "n_triangles",
-        (F.lit(3.0) * F.col("n_triangles") / F.col("n_wedges")).alias("global_clustering"),
-    )
-
-
-PR_ITERS = 10
-PR_DAMP_NUM, PR_DAMP_DEN = 85, 100  # damping 0.85 as an exact ratio
-PR_SCALE = 1_000_000  # ranks held in integer micro-units
-
-
-def _pagerank_oracle() -> str:
-    """10 unrolled iteration CTEs replicating the integer micro-unit
-    arithmetic exactly: share = trunc(rank/deg) (nonnegative, so trunc
-    == Spark's double->long cast), damped update = base +
-    trunc(in_sum*85/100.0). All intermediates stay far below 2^53, so
-    the double divisions are identical IEEE operations in both engines.
-    """
-    parts = [
-        _SQL_EDGES,
-        """
-    , both_e AS (
-      SELECT u, v FROM edges UNION ALL SELECT v AS u, u AS v FROM edges
-    ), deg AS (
-      SELECT u, count(*) AS out_deg FROM both_e GROUP BY u
-    ), nn AS (
-      SELECT count(*) AS n_nodes FROM deg
-    ), r0 AS MATERIALIZED (
-      SELECT u AS node, out_deg,
-             CAST(({scale} // n_nodes) AS BIGINT) AS rank_u
-      FROM deg, nn
-    )""".format(scale=PR_SCALE),
-    ]
-    prev = "r0"
-    for i in range(1, PR_ITERS + 1):
-        parts.append(
-            """
-    , c{i} AS MATERIALIZED (
-      SELECT b.v AS node,
-             CAST(sum(CAST(trunc(CAST(r.rank_u AS DOUBLE) / CAST(r.out_deg AS DOUBLE)) AS BIGINT)) AS BIGINT) AS in_sum
-      FROM both_e b JOIN {prev} r ON r.node = b.u
-      GROUP BY b.v
-    ), r{i} AS MATERIALIZED (
-      SELECT r.node, r.out_deg,
-             CAST(((({dden} - {dnum}) * {scale}) // ({dden} * nn.n_nodes))
-                  + CAST(trunc(CAST(coalesce(c.in_sum, 0) * {dnum} AS DOUBLE) / {dden}.0) AS BIGINT) AS BIGINT) AS rank_u
-      FROM {prev} r LEFT JOIN c{i} c ON c.node = r.node, nn
-    )""".format(i=i, prev=prev, scale=PR_SCALE, dnum=PR_DAMP_NUM, dden=PR_DAMP_DEN)
-        )
-        prev = "r%d" % i
-    parts.append(
-        """
-    SELECT node,
-           rank_u                                   AS rank_micro,
-           CAST(rank_u AS DOUBLE) / {scale}.0       AS rank
-    FROM {prev}
-    """.format(scale=PR_SCALE, prev=prev)
-    )
-    return "".join(parts)
-
-
-@register("graph_pagerank_copurchase", oracle=_pagerank_oracle())
-def graph_pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PageRank over the co-purchase graph, 10 fixed power iterations,
-    computed in *integer micro-units* so the result is bit-identical
-    under any partitioning (`tests/test_pagerank.py` additionally pins
-    exact values against an independent single-machine replica).
-
-    Why integers: FP summation order across shuffle partitions is
-    nondeterministic, so a double-typed PageRank differs run to run in
-    the low bits. Holding ranks in int64 micro-units with integer
-    division for the neighbor contribution makes every iteration an
-    order-independent int64 sum — deterministic at any scale — at the
-    cost of ~1e-6 truncation per hop (documented, bounded by
-    iters/SCALE).
-
-    Shape per iteration: one groupBy(dst) over the edge contribution
-    stream; degrees and ranks join the (node-sized) tables broadcast.
-    The iteration count is fixed — the driver-side loop is bounded and
-    each round is localCheckpointed to keep lineage flat (the same
-    discipline as `connected_components`).
-
-    Oracle: a recursive CTE cannot aggregate in its recursive term,
-    but the FIXED iteration count lets the DuckDB twin unroll all 10
-    iterations as chained MATERIALIZED CTEs (`_pagerank_oracle`) with
-    the identical integer arithmetic — so even this iterative operator
-    is hash-verified value-for-value, not rows-only.
-    """
-    t = Tables(spark, sf_dir)
-    edges = edge_table(spark, t, sf_dir)
-    # undirected -> both directions carry rank
-    both = edges.unionByName(
-        edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).localCheckpoint(eager=True)
-
-    deg = both.groupBy("u").agg(F.count(F.lit(1)).alias("out_deg"))
-    nodes = deg.select(F.col("u").alias("node"), "out_deg")
-    n_nodes = nodes.count()
-    base = (PR_DAMP_DEN - PR_DAMP_NUM) * PR_SCALE // (PR_DAMP_DEN * n_nodes)
-
-    ranks = nodes.select(
-        "node", "out_deg", F.lit(PR_SCALE // n_nodes).cast("long").alias("rank_u")
-    ).localCheckpoint(eager=True)
-
-    for _ in range(PR_ITERS):
-        contrib = (
-            both.join(
-                ranks.select(
-                    F.col("node").alias("u"),
-                    (F.col("rank_u") / F.col("out_deg")).cast("long").alias("share"),
-                ),
-                "u",
-            )
-            .groupBy(F.col("v").alias("node"))
-            .agg(F.sum("share").alias("in_sum"))
-        )
-        ranks = (
-            ranks.join(contrib, "node", "left")
-            .select(
-                "node",
-                "out_deg",
-                (
-                    F.lit(base)
-                    + (F.coalesce(F.col("in_sum"), F.lit(0)) * PR_DAMP_NUM / PR_DAMP_DEN)
-                    .cast("long")
-                ).alias("rank_u"),
-            )
-            .localCheckpoint(eager=True)
-        )
-
-    return ranks.select(
-        "node",
-        F.col("rank_u").alias("rank_micro"),
-        (F.col("rank_u") / F.lit(float(PR_SCALE))).alias("rank"),
-    )
-
-
-MIN_PAIR_ORDERS = 2    # support floor for association rules
-
-
-@register(
-    "graph_market_basket_lift",
-    oracle=f"""
-    WITH li AS (
+# weighted co-purchase edges: w = number of orders containing BOTH
+# parts (the multiplicity the unweighted shared edge table drops).
+_SQL_WEDGES = """
+    wli AS (
       SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
-    ), n AS (
-      SELECT CAST(count(DISTINCT l_orderkey) AS BIGINT) AS n_orders FROM li
-    ), item AS (
-      SELECT l_partkey AS p, CAST(count(*) AS BIGINT) AS c FROM li GROUP BY 1
-    ), pair AS (
-      SELECT a.l_partkey AS u, b.l_partkey AS v, CAST(count(*) AS BIGINT) AS c_uv
-      FROM li a JOIN li b
+    ), wedges AS (
+      SELECT a.l_partkey AS u, b.l_partkey AS v,
+             CAST(count(*) AS BIGINT) AS w
+      FROM wli a JOIN wli b
         ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-      GROUP BY 1, 2
+      GROUP BY a.l_partkey, b.l_partkey
     )
-    SELECT u, v, c_uv,
-           round(CAST(c_uv AS DOUBLE) / n_orders, 6) AS support,
-           round(CAST(c_uv AS DOUBLE) / cu.c, 6) AS confidence_u_v,
-           round(CAST(n_orders AS DOUBLE) * c_uv / (cu.c * cv.c), 6) AS lift
-    FROM pair
-    JOIN item cu ON cu.p = u
-    JOIN item cv ON cv.p = v
-    CROSS JOIN n
-    WHERE c_uv >= {MIN_PAIR_ORDERS}
-    """,
-)
-def graph_market_basket_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Association rules over co-purchases: support, confidence and
-    lift for every part pair bought together in >= MIN_PAIR_ORDERS
-    orders (the A-priori first pass / recommender prior).
+"""
 
-    Reuses the basket build: pair counts explode map-side from
-    per-order part arrays (one groupBy l_orderkey), then aggregate on
-    the pair key; item supports and the order total are dimension-
-    sized and broadcast, so the pair table never reshuffles for the
-    ratio join. The support floor prunes the long tail BEFORE the
-    join — at 100 TB that floor is what keeps the rule table
-    dimension-sized. All ratios are single divisions of exact counts.
-    """
-    t = Tables(spark, sf_dir)
-    li = t.lineitem.select("l_orderkey", "l_partkey").distinct()
-    arr = F.sort_array(F.collect_set("l_partkey"))
-    baskets = li.groupBy("l_orderkey").agg(arr.alias("parts"))
-    pairs = F.flatten(
-        F.transform(
-            F.col("parts"),
-            lambda x, i: F.transform(
-                F.slice(F.col("parts"), i + 2, F.size(F.col("parts"))),
-                lambda y: F.struct(x.alias("u"), y.alias("v")),
-            ),
-        )
+
+def _wedges(t: Tables) -> DataFrame:
+    """Session-materialized weighted co-purchase edge list (u < v,
+    w = co-order multiplicity). SQL twin: ``_SQL_WEDGES``.
+
+    Four queries consume this derivation (``graph_weighted_triangles``,
+    ``graph_weighted_clustering_barrat``, ``graph_pagerank_weighted``,
+    ``graph_strength_assortativity``); each used to re-run the basket
+    pair generation + pair-count aggregate (~2-4 s at sf0.1 apiece).
+    Like ``edge_table`` it materializes ONCE per (application, fixture)
+    into the warehouse, sorted by u so the src-keyed joins every
+    consumer starts with get run-length-friendly parquet."""
+    from ..warehouse import ensure_table, fixture_tag
+
+    tag = fixture_tag(t.spark, t.sf_dir, ("lineitem.parquet",))
+    # ``weighted_edge_table`` owns the ``graph_wedges_<tag>`` name for
+    # the affinity-DISTANCE table (w = 1e6 div (cnt+1)); this is the
+    # raw co-order COUNT table, so it must carry a distinct name (a
+    # collision once fed count weights into graph_weighted_sssp_seeds).
+    return ensure_table(
+        t.spark,
+        f"graph_cowedges_{tag}",
+        lambda: _wedges_build(t).sortWithinPartitions("u", "v"),
     )
-    pair = (
-        baskets.select(F.explode(pairs).alias("e"))
-        .select(F.col("e.u").alias("u"), F.col("e.v").alias("v"))
+
+
+def _wedges_build(t: Tables) -> DataFrame:
+    """Weighted co-purchase edges (u < v, w = co-order multiplicity) —
+    the basket pairs of ``_edges`` counted instead of deduped."""
+    return (
+        _basket_pairs(t.lineitem.select("l_orderkey", "l_partkey"))
         .groupBy("u", "v")
-        .agg(F.count(F.lit(1)).alias("c_uv"))
-        .where(F.col("c_uv") >= MIN_PAIR_ORDERS)
+        .agg(F.count(F.lit(1)).cast("long").alias("w"))
     )
-    item = li.groupBy(F.col("l_partkey")).agg(F.count(F.lit(1)).alias("c"))
-    n = li.agg(F.count_distinct("l_orderkey").alias("n_orders"))
-    cu = item.select(F.col("l_partkey").alias("u"), F.col("c").alias("c_u"))
-    cv = item.select(F.col("l_partkey").alias("v"), F.col("c").alias("c_v"))
-    nd = F.col("n_orders").cast("double")
-    return (
-        pair.join(F.broadcast(cu), "u")
-        .join(F.broadcast(cv), "v")
-        .crossJoin(F.broadcast(n))
-        .select(
-            "u",
-            "v",
-            "c_uv",
-            F.round(F.col("c_uv").cast("double") / nd, 6).alias("support"),
-            F.round(F.col("c_uv").cast("double") / F.col("c_u"), 6).alias(
-                "confidence_u_v"
-            ),
-            F.round(nd * F.col("c_uv") / (F.col("c_u") * F.col("c_v")), 6).alias("lift"),
+
+
+def weighted_edge_table(spark: SparkSession, t: Tables, sf_dir: str) -> DataFrame:
+    """Session-materialized WEIGHTED co-purchase adjacency (both
+    directions, affinity distance w = 1e6 div (co_orders + 1)) — the
+    weighted sibling of ``edge_table``. Rebuilding it per run was ~8 s
+    of the 8.9 s SSSP wall at sf0.1; like the unweighted edge list, it
+    is exactly the derived table a lakehouse maintains incrementally."""
+    from ..warehouse import ensure_table, fixture_tag
+
+    def build() -> DataFrame:
+        pairc = (
+            _basket_pairs(t.lineitem.select("l_orderkey", "l_partkey"))
+            .groupBy("u", "v")
+            .agg(F.count(F.lit(1)).alias("cnt"))
         )
+        w = F.expr("1000000 div (cnt + 1)")
+        return pairc.select("u", "v", w.alias("w")).sortWithinPartitions("u", "v")
+
+    tag = fixture_tag(spark, sf_dir, ("lineitem.parquet",))
+    # one direction on disk (halves the write); both directions at read
+    return adjacency(ensure_table(spark, f"graph_wedges_{tag}", build))
+
+
+def adjacency(edges: DataFrame) -> DataFrame:
+    """Both directions of an undirected edge list (u < v): every edge
+    as u -> v and as v -> u, any other columns (a weight) carried
+    along. A plain UNION ALL — no shuffle of its own."""
+    rest = [c for c in edges.columns if c not in ("u", "v")]
+    return edges.unionAll(
+        edges.select(F.col("v").alias("u"), F.col("u").alias("v"), *rest)
     )
 
 
-# --- common-neighbor link prediction ---------------------------------------
+def frontier_bfs(
+    adj: DataFrame, seeds: DataFrame, hops: int
+) -> list[tuple[DataFrame, DataFrame]]:
+    """Synchronous multi-source BFS from ``seeds`` (a ``node`` column)
+    over the directed adjacency ``adj`` (u -> v): ``[(frontier,
+    visited)]`` for hop 0..``hops``, where ``frontier`` holds the nodes
+    first reached at that hop and ``visited`` every node reached so far.
 
-LINKPRED_SEEDS = 50   # seed parts: l_partkey < LINKPRED_SEEDS
-LINKPRED_TOPK = 5     # recommendations per seed
-LINKPRED_MIN_CN = 2   # candidate floor: at least 2 common neighbors
-
-
-def _linkpred_oracle() -> str:
-    from ..functions.exact import sql_round_int_ratio
-
-    return (
-        _SQL_EDGES
-        + f"""
-    , adj AS (
-      SELECT u, v FROM edges UNION ALL SELECT v AS u, u AS v FROM edges
-    ), deg AS (
-      SELECT u AS node, CAST(count(*) AS BIGINT) AS degree FROM adj GROUP BY u
-    ), cn AS (
-      SELECT e1.u AS seed, e2.v AS cand, CAST(count(*) AS BIGINT) AS common_neighbors
-      FROM adj e1 JOIN adj e2 ON e1.v = e2.u
-      WHERE e1.u < {LINKPRED_SEEDS} AND e2.v <> e1.u
-      GROUP BY 1, 2
-    ), cand AS (
-      SELECT c.seed, c.cand, c.common_neighbors
-      FROM cn c LEFT JOIN edges e
-        ON least(c.seed, c.cand) = e.u AND greatest(c.seed, c.cand) = e.v
-      WHERE e.u IS NULL AND c.common_neighbors >= {LINKPRED_MIN_CN}
-    ), scored AS (
-      SELECT c.seed, c.cand, c.common_neighbors,
-             {sql_round_int_ratio('c.common_neighbors',
-                                  'da.degree + db.degree - c.common_neighbors')}
-               AS jaccard
-      FROM cand c JOIN deg da ON c.seed = da.node JOIN deg db ON c.cand = db.node
-    )
-    SELECT seed AS seed_part, cand AS recommended_part, common_neighbors, jaccard, rnk
-    FROM (
-      SELECT *, CAST(row_number() OVER (PARTITION BY seed
-                     ORDER BY common_neighbors DESC, jaccard DESC, cand) AS BIGINT)
-               AS rnk
-      FROM scored
-    ) WHERE rnk <= {LINKPRED_TOPK}
-    """
-    )
-
-
-@register("graph_common_neighbors_linkpred", oracle=_linkpred_oracle())
-def graph_common_neighbors_linkpred(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Link prediction over the co-purchase graph, PER SEED: for each
-    seed part, the top non-adjacent parts ranked by common-neighbor
-    count (neighborhood Jaccard as the normalized tie-break) — the
-    "customers who bought this also bought" recommender primitive, and
-    the fourth member of the graph family (degree -> histogram,
-    closure -> triangles, influence -> PageRank, prediction -> this).
-
-    Deliberately seed-bounded, NOT all-pairs: global all-pairs
-    common-neighbor counting is Sum C(deg,2) wedges — 1.5e8 at sf0.1
-    and growing linearly with the corpus — whereas a recommender
-    answers for a query set. Cost here is two bounded hops from the
-    seeds: |N(seed)| rows, then Sum deg(n) over those neighbors, both
-    broadcast-joinable fractions of the edge set at any scale. The
-    anti-join against the edge list removes already-connected pairs,
-    and the per-seed top-k is a partitioned window. Jaccard is an
-    exact half-up integer ratio.
-    """
-    from ..functions.exact import round_int_ratio
-
-    t = Tables(spark, sf_dir)
-    edges = edge_table(spark, t, sf_dir)
-    adj = edges.unionAll(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    hop1 = adj.filter(F.col("u") < LINKPRED_SEEDS).select(
-        F.col("u").alias("seed"), F.col("v").alias("n")
-    )
-    hop2 = adj.select(F.col("u").alias("n"), F.col("v").alias("cand"))
-    cn = (
-        hop1.join(hop2, "n")
-        .filter(F.col("cand") != F.col("seed"))
-        .groupBy("seed", "cand")
-        .agg(F.count(F.lit(1)).alias("common_neighbors"))
-        .filter(F.col("common_neighbors") >= LINKPRED_MIN_CN)
-    )
-    pair_u = F.least(F.col("seed"), F.col("cand"))
-    pair_v = F.greatest(F.col("seed"), F.col("cand"))
-    cand = cn.join(
-        edges,
-        (pair_u == edges.u) & (pair_v == edges.v),
-        "left_anti",
-    )
-    deg = _degrees(edges)
-    da = deg.select(F.col("node").alias("seed"), F.col("degree").alias("deg_a"))
-    db = deg.select(F.col("node").alias("cand"), F.col("degree").alias("deg_b"))
-    scored = (
-        cand.join(da, "seed")
-        .join(db, "cand")
-        .select(
-            "seed",
-            "cand",
-            "common_neighbors",
-            round_int_ratio(
-                F.col("common_neighbors"),
-                F.col("deg_a") + F.col("deg_b") - F.col("common_neighbors"),
-            ).alias("jaccard"),
+    The textbook BSP/Pregel round: ONE equi-join of the adjacency list
+    against the current frontier plus an anti-join against the visited
+    set, hash-only shuffles bounded by |frontier| and |visited|, never
+    all-pairs. Every frontier and visited set is lineage-cut with
+    ``iter_checkpoint`` so hop k costs one join, not a k-deep
+    recompute."""
+    frontier = iter_checkpoint(seeds.select("node"))
+    visited = frontier
+    out = [(frontier, visited)]
+    for _ in range(hops):
+        frontier = iter_checkpoint(
+            adj.join(frontier.select(F.col("node").alias("u")), "u")
+            .select(F.col("v").alias("node"))
+            .distinct()
+            .join(visited, "node", "left_anti")
         )
-    )
-    from pyspark.sql import Window
+        visited = iter_checkpoint(visited.unionAll(frontier))
+        out.append((frontier, visited))
+    return out
 
-    w = Window.partitionBy("seed").orderBy(
-        F.col("common_neighbors").desc(), F.col("jaccard").desc(), F.col("cand")
-    )
+
+def seed_hop(adj: DataFrame, reached: DataFrame) -> DataFrame:
+    """One hop out of each seed's node set: distinct (seed, node) for
+    every adjacency edge leaving ``reached`` (seed, node), the seed
+    itself excluded. Keyed by (seed, node), so the state stays
+    |seeds| x |reach| rows at any corpus scale."""
     return (
-        scored.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= LINKPRED_TOPK)
-        .select(
-            F.col("seed").alias("seed_part"),
-            F.col("cand").alias("recommended_part"),
-            "common_neighbors",
-            "jaccard",
-            "rnk",
-        )
+        reached.select("seed", F.col("node").alias("u"))
+        .join(adj, "u")
+        .where(F.col("v") != F.col("seed"))
+        .select("seed", F.col("v").alias("node"))
+        .distinct()
     )
+
+
+def seed_layers(adj: DataFrame, seeds: DataFrame, depth: int) -> list[DataFrame]:
+    """Exact-distance BFS layers per seed: element d-1 holds the
+    distinct (seed, node) pairs at hop distance exactly d, for
+    d = 1..``depth``. ``seeds`` has one ``seed`` column. Layer d is
+    ``seed_hop`` of layer d-1 anti-joined against every closer layer,
+    so each layer is one node-keyed equi-join plus d-1 anti-joins."""
+    layers = [
+        seeds.join(adj, seeds.seed == adj.u)
+        .select("seed", F.col("v").alias("node"))
+        .distinct()
+    ]
+    for _ in range(depth - 1):
+        nxt = seed_hop(adj, layers[-1])
+        for closer in layers:
+            nxt = nxt.join(closer, ["seed", "node"], "left_anti")
+        layers.append(nxt)
+    return layers

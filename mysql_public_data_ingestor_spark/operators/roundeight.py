@@ -1,7 +1,6 @@
 """Round-8 operators: the VERDICT r7 item-5 follow-throughs.
 
-Frontier-bounded BFS and per-edge triangle support over the shared
-graph tables, an IVF-PQ recall audit against the exact scan, residual
+An IVF-PQ recall audit against the exact scan, residual
 diagnostics for the in-warehouse logistic model, an oracle-paired
 mergeable quantile sketch, and a robust-stats / testing pack
 (Cohen's d, trimmed/winsorized means, McNemar, runs test, n-gram
@@ -23,158 +22,6 @@ from pyspark.sql.window import Window
 from ..functions.exact import dec38
 from ..registry import register
 from ..tables import Tables
-
-
-# ---------------------------------------------------------------------------
-# 1. Frontier-bounded multi-source BFS over the co-purchase graph
-# ---------------------------------------------------------------------------
-
-BFS_SEED_MAX = 20  # seed set: graph nodes with partkey < BFS_SEED_MAX
-BFS_HOPS = 4
-
-
-def _bfs_oracle() -> str:
-    from .graph import _SQL_EDGES
-
-    parts = [
-        _SQL_EDGES,
-        f"""
-    , adj AS MATERIALIZED (
-      SELECT u, v FROM edges UNION ALL SELECT v AS u, u AS v FROM edges
-    ), f0 AS MATERIALIZED (
-      SELECT DISTINCT u AS node FROM adj WHERE u < {BFS_SEED_MAX}
-    ), v0 AS MATERIALIZED (SELECT node FROM f0)""",
-    ]
-    for k in range(1, BFS_HOPS + 1):
-        parts.append(
-            f"""
-    , f{k} AS MATERIALIZED (
-      SELECT DISTINCT a.v AS node
-      FROM adj a JOIN f{k - 1} f ON a.u = f.node
-      WHERE a.v NOT IN (SELECT node FROM v{k - 1})
-    ), v{k} AS MATERIALIZED (
-      SELECT node FROM v{k - 1} UNION SELECT node FROM f{k}
-    )"""
-        )
-    selects = [
-        f"""SELECT CAST({k} AS BIGINT) AS hop,
-               (SELECT CAST(count(*) AS BIGINT) FROM f{k}) AS n_new,
-               (SELECT CAST(count(*) AS BIGINT) FROM v{k}) AS n_reached"""
-        for k in range(BFS_HOPS + 1)
-    ]
-    return "".join(parts) + " " + " UNION ALL ".join(selects)
-
-
-@register("graph_bfs_frontier_hops", oracle=_bfs_oracle())
-def graph_bfs_frontier_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multi-source BFS from the seed parts (partkey < {BFS_SEED_MAX}),
-    {BFS_HOPS} synchronous frontier expansions over the session-cached
-    co-purchase edge table: per hop, how many new nodes the frontier
-    reaches and the cumulative reachable set — the reachability /
-    blast-radius primitive (recall propagation, contamination spread)
-    and the graph family's shortest-path member (hop = unweighted
-    distance, VERDICT r7 item 5).
-
-    Scale: the textbook BSP/Pregel BFS — each round is ONE equi-join
-    of the adjacency list against the current frontier plus an
-    anti-join against the visited set, all hash-only shuffles bounded
-    by |frontier| and |visited|, never all-pairs. The fixed hop count
-    keeps the unrolled-CTE oracle exact; rounds are lineage-cut via
-    ``iter_checkpoint`` so round R costs one join, not an R-deep
-    recompute (SPARK_GRAFT_ITER_PERSIST picks the executor-loss-safe
-    persist path on clusters with churn).
-    """
-    from ..functions.partitioning import iter_checkpoint
-    from .graph import edge_table
-
-    t = Tables(spark, sf_dir)
-    edges = edge_table(spark, t, sf_dir)
-    adj = iter_checkpoint(
-        edges.unionAll(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    )
-    frontier = iter_checkpoint(
-        adj.select(F.col("u").alias("node"))
-        .where(F.col("node") < BFS_SEED_MAX)
-        .distinct()
-    )
-    visited = frontier
-    rows = [
-        frontier.agg(F.count(F.lit(1)).alias("n_new")).crossJoin(
-            F.broadcast(visited.agg(F.count(F.lit(1)).alias("n_reached")))
-        ).select(F.lit(0).cast("long").alias("hop"), "n_new", "n_reached")
-    ]
-    for k in range(1, BFS_HOPS + 1):
-        frontier = iter_checkpoint(
-            adj.join(frontier.select(F.col("node").alias("u")), "u")
-            .select(F.col("v").alias("node"))
-            .distinct()
-            .join(visited, "node", "left_anti")
-        )
-        visited = iter_checkpoint(visited.unionAll(frontier))
-        rows.append(
-            frontier.agg(F.count(F.lit(1)).alias("n_new")).crossJoin(
-                F.broadcast(visited.agg(F.count(F.lit(1)).alias("n_reached")))
-            ).select(F.lit(k).cast("long").alias("hop"), "n_new", "n_reached")
-        )
-    out = rows[0]
-    for r in rows[1:]:
-        out = out.unionByName(r)
-    return out
-
-
-# ---------------------------------------------------------------------------
-# 2. Per-edge triangle support (top-k) off the shared triangle table
-# ---------------------------------------------------------------------------
-
-EDGE_SUPPORT_TOPK = 20
-
-
-def _edge_support_oracle() -> str:
-    from .graph import _SQL_TRI_CTES
-
-    return _SQL_TRI_CTES + f"""
-    , es AS (
-      SELECT least(a, b) AS u, greatest(a, b) AS v FROM tris
-      UNION ALL SELECT least(a, c), greatest(a, c) FROM tris
-      UNION ALL SELECT b, c FROM tris
-    )
-    SELECT u, v, CAST(count(*) AS BIGINT) AS support
-    FROM es GROUP BY u, v
-    ORDER BY support DESC, u, v
-    LIMIT {EDGE_SUPPORT_TOPK}
-    """
-
-
-@register("graph_edge_triangle_support", oracle=_edge_support_oracle())
-def graph_edge_triangle_support(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-{EDGE_SUPPORT_TOPK} edges by triangle SUPPORT (number of
-    triangles the edge participates in) — the truss-decomposition /
-    strong-tie primitive: high-support edges sit inside dense
-    communities, support-0 edges are bridges.
-
-    Consumes the session-shared ``graph.triangle_table`` (VERDICT r7
-    item 3: one enumeration feeds the global count, the local
-    clustering ranking, and this) — the marginal cost here is a 3-way
-    corner unpivot, a (u, v) aggregate, and a TakeOrderedAndProject
-    top-k on the total order (support desc, u, v). No new wedge join.
-    """
-    from .graph import triangle_table
-
-    t = Tables(spark, sf_dir)
-    tris = triangle_table(spark, t, sf_dir)
-    es = (
-        tris.select(F.least("a", "b").alias("u"), F.greatest("a", "b").alias("v"))
-        .unionAll(
-            tris.select(F.least("a", "c").alias("u"), F.greatest("a", "c").alias("v"))
-        )
-        .unionAll(tris.select(F.col("b").alias("u"), F.col("c").alias("v")))
-    )
-    return (
-        es.groupBy("u", "v")
-        .agg(F.count(F.lit(1)).alias("support"))
-        .orderBy(F.col("support").desc(), "u", "v")
-        .limit(EDGE_SUPPORT_TOPK)
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -1556,78 +1403,3 @@ def dq_iqr_outlier_fences(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_high_outliers",
         )
     )
-
-
-# ---------------------------------------------------------------------------
-# 16. Per-seed k-hop reach over the co-purchase graph
-# ---------------------------------------------------------------------------
-
-KHOP_SEED_MAX = 10
-
-
-def _khop_oracle() -> str:
-    from .graph import _SQL_EDGES
-
-    return _SQL_EDGES + f"""
-    , adj AS MATERIALIZED (
-      SELECT u, v FROM edges UNION ALL SELECT v AS u, u AS v FROM edges
-    ), seeds AS (
-      SELECT DISTINCT u AS seed FROM adj WHERE u < {KHOP_SEED_MAX}
-    ), h1 AS MATERIALIZED (
-      SELECT DISTINCT s.seed, a.v AS node
-      FROM seeds s JOIN adj a ON a.u = s.seed
-    ), h2 AS (
-      SELECT DISTINCT h.seed, a.v AS node
-      FROM h1 h JOIN adj a ON a.u = h.node
-      WHERE a.v <> h.seed
-    )
-    SELECT s.seed,
-           (SELECT CAST(count(*) AS BIGINT) FROM h1 WHERE h1.seed = s.seed)
-             AS n_1hop,
-           (SELECT CAST(count(*) AS BIGINT) FROM
-              (SELECT node FROM h2 WHERE h2.seed = s.seed
-               UNION SELECT node FROM h1 WHERE h1.seed = s.seed))
-             AS n_within_2hops
-    FROM seeds s
-    """
-
-
-@register("graph_khop_reach_per_seed", oracle=_khop_oracle())
-def graph_khop_reach_per_seed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-seed neighborhood growth: distinct nodes within 1 and
-    within 2 hops of each seed part — the per-entity blast-radius
-    profile (the aggregate BFS above reports the union; this ranks
-    individual seeds by reach, the "how connected is THIS product"
-    question).
-
-    Two adjacency self-equi-joins keyed by (seed, node) with distinct
-    — the state is |seeds| x |reach| rows, bounded by the seed set at
-    any corpus scale, never all-pairs; counts reduce per seed. Reads
-    the session-cached edge table.
-    """
-    from .graph import edge_table
-
-    t = Tables(spark, sf_dir)
-    edges = edge_table(spark, t, sf_dir)
-    adj = edges.unionAll(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    seeds = (
-        adj.select(F.col("u").alias("seed"))
-        .where(F.col("seed") < KHOP_SEED_MAX)
-        .distinct()
-    )
-    h1 = (
-        seeds.join(adj, seeds.seed == adj.u)
-        .select("seed", F.col("v").alias("node"))
-        .distinct()
-    )
-    h2 = (
-        h1.select("seed", F.col("node").alias("u"))
-        .join(adj, "u")
-        .where(F.col("v") != F.col("seed"))
-        .select("seed", F.col("v").alias("node"))
-        .distinct()
-    )
-    reach2 = h1.unionAll(h2).distinct()
-    n1 = h1.groupBy("seed").agg(F.count(F.lit(1)).alias("n_1hop"))
-    n2 = reach2.groupBy("seed").agg(F.count(F.lit(1)).alias("n_within_2hops"))
-    return n1.join(n2, "seed")

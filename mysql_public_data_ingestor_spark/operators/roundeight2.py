@@ -4,8 +4,7 @@ weighted link prediction, and recall auditing for the dedup family.
 Kruskal-Wallis and Mood's median fill out the nonparametric testing
 family (complementing Mann-Whitney / Welch ANOVA / Levene); mutual
 information extends the det-ln information-theory surface from text to
-warehouse columns; Adamic-Adar is the degree-weighted companion of the
-common-neighbors link predictor; and the MinHash recall audit closes
+warehouse columns; and the MinHash recall audit closes
 the loop VERDICT r7 opened for IVF-PQ — measure the approximate
 operator against its exact ground truth *as a registered query*.
 
@@ -400,126 +399,6 @@ def stats_mutual_info_priority_segment(spark: SparkSession, sf_dir: str) -> Data
         round_big_int_ratio(hx_num, nano, 6).alias("h_priority"),
         round_big_int_ratio(hy_num, nano, 6).alias("h_segment"),
         round_big_int_ratio(F.col("mi_num"), hx_num, 6).alias("uncertainty_coeff"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# 4. Adamic-Adar link prediction (degree-weighted common neighbors)
-# ---------------------------------------------------------------------------
-
-AA_SEEDS = 40   # seed parts: graph nodes with partkey < AA_SEEDS
-AA_TOPK = 5     # recommendations per seed
-AA_MIN_CN = 2   # candidate floor: at least 2 common neighbors
-
-
-def _aa_oracle() -> str:
-    from .graph import _SQL_EDGES
-    from ..functions.detmath import sql_det_ln_steps
-
-    return (
-        _SQL_EDGES
-        + f"""
-    , adj AS (
-      SELECT u, v FROM edges UNION ALL SELECT v AS u, u AS v FROM edges
-    ), deg AS (
-      SELECT u AS node, CAST(count(*) AS BIGINT) AS degree FROM adj GROUP BY u
-    ), {sql_det_ln_steps('deg', 'degree', 'ln_deg', 9)},
-    dterm AS (
-      SELECT node,
-             (2000000000000000::BIGINT + ln_deg) // (2 * ln_deg) AS term_u
-      FROM ln_deg_rel WHERE degree >= 2
-    ), wedge AS (
-      SELECT e1.u AS seed, e2.v AS cand, e1.v AS mid
-      FROM adj e1 JOIN adj e2 ON e1.v = e2.u
-      WHERE e1.u < {AA_SEEDS} AND e2.v <> e1.u
-    ), cn AS (
-      SELECT w.seed, w.cand,
-             CAST(count(*) AS BIGINT) AS common_neighbors,
-             CAST(sum(d.term_u) AS BIGINT) AS sum_u
-      FROM wedge w JOIN dterm d ON w.mid = d.node
-      GROUP BY w.seed, w.cand
-    ), cand AS (
-      SELECT c.seed, c.cand, c.common_neighbors, c.sum_u
-      FROM cn c LEFT JOIN edges e
-        ON least(c.seed, c.cand) = e.u AND greatest(c.seed, c.cand) = e.v
-      WHERE e.u IS NULL AND c.common_neighbors >= {AA_MIN_CN}
-    )
-    SELECT seed AS seed_part, cand AS recommended_part, common_neighbors,
-           sum_u / 1000000.0 AS adamic_adar, rnk
-    FROM (
-      SELECT *, CAST(row_number() OVER (PARTITION BY seed
-                     ORDER BY sum_u DESC, common_neighbors DESC, cand) AS BIGINT)
-               AS rnk
-      FROM cand
-    ) WHERE rnk <= {AA_TOPK}
-    """
-    )
-
-
-@register("graph_adamic_adar_linkpred", oracle=_aa_oracle())
-def graph_adamic_adar_linkpred(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Adamic-Adar link prediction over the co-purchase graph, per
-    seed: common neighbors weighted by 1/ln(degree), so a rare part
-    co-bought with both endpoints is stronger evidence than a hub that
-    everything is bought with — the degree-aware upgrade of
-    ``graph_common_neighbors_linkpred`` (same seed-bounded shape, same
-    anti-join against existing edges, different score).
-
-    1/ln(deg) is evaluated ONCE per node on the |nodes|-bounded degree
-    table (det-ln dp=9, then a half-up integer reciprocal in micro
-    units), never per wedge row; per-pair scores are exact integer
-    sums of those micro terms, so the top-k ordering is cross-engine
-    identical with no float accumulation anywhere. A common neighbor
-    always has degree >= 2, so ln is never 0. Cost is the same two
-    bounded hops from the seeds as the common-neighbors op; at 100 TB
-    both hop joins shuffle on node keys with no cartesian anywhere.
-    """
-    from .graph import _degrees, edge_table
-    from ..functions.detmath import det_ln_q
-
-    t = Tables(spark, sf_dir)
-    edges = edge_table(spark, t, sf_dir)
-    adj = edges.unionAll(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    hop1 = adj.filter(F.col("u") < AA_SEEDS).select(
-        F.col("u").alias("seed"), F.col("v").alias("mid")
-    )
-    hop2 = adj.select(F.col("u").alias("mid"), F.col("v").alias("cand"))
-    wedge = hop1.join(hop2, "mid").filter(F.col("cand") != F.col("seed"))
-    # det-ln only on degrees of nodes that ARE wedge midpoints (the
-    # seeds' hop-1 neighborhood) — the full degree table grows with
-    # the corpus, the mid set is seed-bounded; measured at ×10 the
-    # unrestricted det-ln dominated the runtime (SCALE.md §5g.4).
-    mids = hop1.select(F.col("mid").alias("node")).distinct()
-    deg = _degrees(edges).join(F.broadcast(mids), "node").filter(F.col("degree") >= 2)
-    ln = det_ln_q(F.col("degree"), 9)
-    a = F.lit(2_000_000_000_000_000).cast("long") + ln
-    b = F.lit(2).cast("long") * ln
-    dterm = deg.select("node", ((a - a % b) / b).cast("long").alias("term_u"))
-    cn = (
-        wedge.join(dterm.withColumnRenamed("node", "mid"), "mid")
-        .groupBy("seed", "cand")
-        .agg(
-            F.count(F.lit(1)).alias("common_neighbors"),
-            F.sum("term_u").alias("sum_u"),
-        )
-        .filter(F.col("common_neighbors") >= AA_MIN_CN)
-    )
-    pair_u = F.least(F.col("seed"), F.col("cand"))
-    pair_v = F.greatest(F.col("seed"), F.col("cand"))
-    cand = cn.join(edges, (pair_u == edges.u) & (pair_v == edges.v), "left_anti")
-    w = Window.partitionBy("seed").orderBy(
-        F.col("sum_u").desc(), F.col("common_neighbors").desc(), F.col("cand")
-    )
-    return (
-        cand.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= AA_TOPK)
-        .select(
-            F.col("seed").alias("seed_part"),
-            F.col("cand").alias("recommended_part"),
-            "common_neighbors",
-            (F.col("sum_u") / F.lit(1000000.0)).alias("adamic_adar"),
-            "rnk",
-        )
     )
 
 

@@ -1,7 +1,6 @@
 """Round-8 batch-6 operators: robust/rank effect sizes, diversity and
 diagnostics that round out the statistics surface, plus DQ primitives
-(cross-column ordering, functional dependencies) and the Jaccard
-member of the link-prediction family.
+(cross-column ordering, functional dependencies).
 
 Hodges-Lehmann / Cliff's delta / Wilcoxon signed-rank complete the
 nonparametric family begun with Mann-Whitney (effect sizes and the
@@ -29,124 +28,6 @@ from pyspark.sql.window import Window
 from ..functions.exact import dec38
 from ..registry import register
 from ..tables import Tables
-
-
-# ---------------------------------------------------------------------------
-# 1. Jaccard-coefficient link prediction over the co-purchase graph
-# ---------------------------------------------------------------------------
-
-JC_SEEDS = 40   # seed parts: graph nodes with partkey < JC_SEEDS
-JC_TOPK = 5     # recommendations per seed
-JC_MIN_CN = 2   # candidate floor: at least 2 common neighbors
-
-
-def _jaccard_oracle() -> str:
-    from .graph import _SQL_EDGES
-    from ..functions.exact import sql_round_int_ratio
-
-    return (
-        _SQL_EDGES
-        + f"""
-    , adj AS (
-      SELECT u, v FROM edges UNION ALL SELECT v AS u, u AS v FROM edges
-    ), deg AS (
-      SELECT u AS node, CAST(count(*) AS BIGINT) AS degree FROM adj GROUP BY u
-    ), wedge AS (
-      SELECT e1.u AS seed, e2.v AS cand
-      FROM adj e1 JOIN adj e2 ON e1.v = e2.u
-      WHERE e1.u < {JC_SEEDS} AND e2.v <> e1.u
-    ), cn AS (
-      SELECT seed, cand, CAST(count(*) AS BIGINT) AS common_neighbors
-      FROM wedge GROUP BY seed, cand
-    ), scored AS (
-      SELECT c.seed, c.cand, c.common_neighbors,
-             {sql_round_int_ratio(
-                 'c.common_neighbors',
-                 'ds.degree + dc.degree - c.common_neighbors')} AS jaccard
-      FROM cn c
-      JOIN deg ds ON ds.node = c.seed
-      JOIN deg dc ON dc.node = c.cand
-      WHERE c.common_neighbors >= {JC_MIN_CN}
-    ), cand AS (
-      SELECT s.* FROM scored s LEFT JOIN edges e
-        ON least(s.seed, s.cand) = e.u AND greatest(s.seed, s.cand) = e.v
-      WHERE e.u IS NULL
-    )
-    SELECT seed AS seed_part, cand AS recommended_part, common_neighbors,
-           jaccard, rnk
-    FROM (
-      SELECT *, CAST(row_number() OVER (PARTITION BY seed
-                     ORDER BY jaccard DESC, common_neighbors DESC, cand)
-                AS BIGINT) AS rnk
-      FROM cand
-    ) WHERE rnk <= {JC_TOPK}
-    """
-    )
-
-
-@register("graph_jaccard_linkpred", oracle=_jaccard_oracle())
-def graph_jaccard_linkpred(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Jaccard-coefficient link prediction per seed part:
-    |N(u) ∩ N(v)| / |N(u) ∪ N(v)| — the normalized member of the
-    link-prediction family (common-neighbors = raw overlap,
-    Adamic-Adar = rarity-weighted, Jaccard = size-normalized, so a
-    small part with 3/4 shared neighborhood outranks a hub sharing 3
-    of 400).
-
-    The score is an exact half-up 6dp integer ratio of the wedge
-    count over deg(u)+deg(v)-cn (inclusion-exclusion on the degree
-    table — no union is ever materialized), so ranking is
-    cross-engine identical. Same seed-bounded two-hop shape as the
-    sibling predictors: both hop joins shuffle on node keys, the
-    degree joins are |nodes|-bounded, no cartesian anywhere.
-    """
-    from .graph import _degrees, edge_table
-    from ..functions.exact import round_int_ratio
-
-    t = Tables(spark, sf_dir)
-    edges = edge_table(spark, t, sf_dir)
-    adj = edges.unionAll(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    hop1 = adj.filter(F.col("u") < JC_SEEDS).select(
-        F.col("u").alias("seed"), F.col("v").alias("mid")
-    )
-    hop2 = adj.select(F.col("u").alias("mid"), F.col("v").alias("cand"))
-    wedge = hop1.join(hop2, "mid").filter(F.col("cand") != F.col("seed"))
-    cn = (
-        wedge.groupBy("seed", "cand")
-        .agg(F.count(F.lit(1)).alias("common_neighbors"))
-        .filter(F.col("common_neighbors") >= JC_MIN_CN)
-    )
-    deg = _degrees(edges)
-    scored = (
-        cn.join(deg.select(F.col("node").alias("seed"), F.col("degree").alias("deg_s")), "seed")
-        .join(deg.select(F.col("node").alias("cand"), F.col("degree").alias("deg_c")), "cand")
-        .select(
-            "seed",
-            "cand",
-            "common_neighbors",
-            round_int_ratio(
-                F.col("common_neighbors"),
-                F.col("deg_s") + F.col("deg_c") - F.col("common_neighbors"),
-            ).alias("jaccard"),
-        )
-    )
-    pair_u = F.least(F.col("seed"), F.col("cand"))
-    pair_v = F.greatest(F.col("seed"), F.col("cand"))
-    cand = scored.join(edges, (pair_u == edges.u) & (pair_v == edges.v), "left_anti")
-    w = Window.partitionBy("seed").orderBy(
-        F.col("jaccard").desc(), F.col("common_neighbors").desc(), F.col("cand")
-    )
-    return (
-        cand.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= JC_TOPK)
-        .select(
-            F.col("seed").alias("seed_part"),
-            F.col("cand").alias("recommended_part"),
-            "common_neighbors",
-            "jaccard",
-            "rnk",
-        )
-    )
 
 
 # ---------------------------------------------------------------------------

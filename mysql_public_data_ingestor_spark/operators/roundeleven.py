@@ -8,8 +8,8 @@ Batch theme — model-fitting and set-algebra completions: discrete Bass
 diffusion fit (3-var Cramer OLS), a Granger-style lag-regression
 comparison, Tukey HSD post-hoc pairs after the ANOVA family, an n-gram
 entropy curve, the KMV theta-UNION (completing distinct /
-intersection / difference), degree-inequality Gini, a deterministic
-exponential-mechanism DP release, and a last-digit preference audit.
+intersection / difference), a deterministic exponential-mechanism DP
+release, and a last-digit preference audit.
 """
 
 from __future__ import annotations
@@ -735,107 +735,6 @@ def sketch_kmv_union_users(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("d_true") > 0,
             round_int_ratio(F.abs(est - F.col("d_true")), F.col("d_true")),
         ).alias("rel_error"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# 6. Degree-inequality Gini of the co-purchase graph
-# ---------------------------------------------------------------------------
-
-
-def _degree_gini_oracle() -> str:
-    from .graph import _SQL_EDGES
-    from ..functions.exact import sql_round_big_int_ratio, sql_round_int_ratio
-
-    return (
-        _SQL_EDGES
-        + f"""
-    , deg AS (
-      SELECT node, CAST(count(*) AS BIGINT) AS degree
-      FROM (SELECT u AS node FROM edges UNION ALL SELECT v FROM edges)
-      GROUP BY node
-    ), coc AS (
-      SELECT degree AS d, CAST(count(*) AS BIGINT) AS m
-      FROM deg GROUP BY degree
-    ), cum AS (
-      SELECT a.d, a.m, CAST(coalesce(sum(b.m), 0) AS HUGEINT) AS r
-      FROM coc a LEFT JOIN coc b ON b.d < a.d
-      GROUP BY a.d, a.m
-    ), agg AS (
-      SELECT CAST(sum(m) AS HUGEINT) AS n,
-             CAST(sum(d::HUGEINT * m) AS HUGEINT) AS sx,
-             CAST(sum(d::HUGEINT * (2 * m * r + m * (m + 1))) AS HUGEINT)
-               AS two_ri
-      FROM cum
-    )
-    SELECT CAST(n AS BIGINT) AS n_nodes, CAST(sx AS BIGINT) AS sum_degree,
-           {sql_round_int_ratio('sx', 'n')} AS mean_degree,
-           CASE WHEN n > 0 AND sx > 0 THEN
-             {sql_round_big_int_ratio('two_ri - (n + 1) * sx', 'n * sx')}
-           END AS gini
-    FROM agg
-    """
-    )
-
-
-@register("graph_degree_gini", _degree_gini_oracle())
-def graph_degree_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gini coefficient of the co-purchase degree distribution — the
-    hub-concentration scalar beside the degree histogram and the
-    rich-club coefficient (the histogram shows the shape; Gini prices
-    the inequality in one number, the classic "is this graph scale-
-    free-ish or egalitarian" screen).
-
-    Exact via the count-of-counts identity: nodes with equal degree d
-    occupy a contiguous rank run (prior-count r, length m), so
-    2*Sum(rank_i*x_i) = Sum_d d*(2*m*r + m*(m+1)) and G =
-    (2*Sum(rank*x) - (n+1)*Sum(x)) / (n*Sum(x)) — one
-    round_big_int_ratio over exact 128-bit integers. The rank
-    cumulative is a broadcast non-equi self-join over the BOUNDED
-    distinct-degree domain (count-of-counts rows, never node rows) —
-    the same shape as diag_key_skew_profile's Lorenz machinery. Edge
-    list comes from the session warehouse (shared with the whole
-    graph family).
-    """
-    from .graph import _degrees, edge_table
-    from ..functions.exact import round_big_int_ratio, round_int_ratio
-
-    t = Tables(spark, sf_dir)
-    deg = _degrees(edge_table(spark, t, sf_dir))
-    coc = deg.groupBy(F.col("degree").alias("d")).agg(
-        F.count(F.lit(1)).alias("m")
-    )
-    cb = coc.select(F.col("d").alias("d_b"), F.col("m").alias("m_b"))
-    cum = (
-        coc.join(F.broadcast(cb), F.col("d_b") < F.col("d"), "left")
-        .groupBy("d", "m")
-        .agg(F.coalesce(F.sum("m_b"), F.lit(0)).alias("r"))
-    )
-    agg = cum.agg(
-        dec38(F.sum("m")).alias("n"),
-        F.sum(dec38(F.col("d")) * dec38(F.col("m"))).alias("sx"),
-        F.sum(
-            dec38(F.col("d"))
-            * (
-                F.lit(2).cast("decimal(38,0)") * dec38(F.col("m")) * dec38(F.col("r"))
-                + dec38(F.col("m")) * (dec38(F.col("m")) + F.lit(1).cast("decimal(38,0)"))
-            )
-        ).alias("two_ri"),
-    )
-    one = F.lit(1).cast("decimal(38,0)")
-    return agg.select(
-        F.col("n").cast("long").alias("n_nodes"),
-        F.col("sx").cast("long").alias("sum_degree"),
-        round_int_ratio(F.col("sx").cast("long"), F.col("n").cast("long")).alias(
-            "mean_degree"
-        ),
-        F.when(
-            (F.col("n") > 0) & (F.col("sx") > 0),
-            round_big_int_ratio(
-                F.col("two_ri") - (F.col("n") + one) * F.col("sx"),
-                F.col("n") * F.col("sx"),
-            ),
-        ).alias("gini"),
     )
 
 
@@ -1582,147 +1481,6 @@ def ml_brier_skill_score(spark: SparkSession, sf_dir: str) -> DataFrame:
             round_big_int_ratio(ref - dec38(F.col("n")) * F.col("sd2"), ref),
         ).alias("brier_skill"),
     )
-
-
-# ---------------------------------------------------------------------------
-# 14. Diameter lower bound via the double-sweep heuristic
-# ---------------------------------------------------------------------------
-
-DSWEEP_HOPS = 6
-
-
-def _dsweep_bfs_sql(tag: str, seed_sql: str) -> str:
-    """Unrolled depth-DSWEEP_HOPS BFS from a scalar seed: emits CTEs
-    ``{tag}_f{k}`` (new nodes at hop k) / ``{tag}_v{k}`` (visited) and
-    ``{tag}_dist`` (node, d = first-reach hop)."""
-    h = DSWEEP_HOPS
-    parts = [
-        f"""
-    , {tag}_f0 AS MATERIALIZED (SELECT ({seed_sql}) AS node),
-    {tag}_v0 AS MATERIALIZED (SELECT node FROM {tag}_f0)"""
-    ]
-    for k in range(1, h + 1):
-        parts.append(
-            f"""
-    , {tag}_f{k} AS MATERIALIZED (
-      SELECT DISTINCT a.v AS node
-      FROM adj a JOIN {tag}_f{k - 1} f ON a.u = f.node
-      WHERE a.v NOT IN (SELECT node FROM {tag}_v{k - 1})
-    ), {tag}_v{k} AS MATERIALIZED (
-      SELECT node FROM {tag}_v{k - 1} UNION SELECT node FROM {tag}_f{k}
-    )"""
-        )
-    dists = " UNION ALL ".join(
-        f"SELECT node, CAST({k} AS BIGINT) AS d FROM {tag}_f{k}"
-        for k in range(h + 1)
-    )
-    parts.append(f", {tag}_dist AS MATERIALIZED ({dists})")
-    return "".join(parts)
-
-
-def _dsweep_oracle() -> str:
-    from .graph import _SQL_EDGES
-
-    far_sql = (
-        "SELECT node FROM s1_dist ORDER BY d DESC, node LIMIT 1"
-    )
-    return (
-        _SQL_EDGES
-        + """
-    , adj AS MATERIALIZED (
-      SELECT u, v FROM edges UNION ALL SELECT v AS u, u AS v FROM edges
-    ), seed0 AS (SELECT min(u) AS node FROM adj)
-    """
-        + _dsweep_bfs_sql("s1", "SELECT node FROM seed0")
-        + _dsweep_bfs_sql("s2", far_sql)
-        + f"""
-    SELECT (SELECT node FROM seed0) AS seed_node,
-           (SELECT max(d) FROM s1_dist) AS sweep1_ecc,
-           ({far_sql}) AS far_node,
-           (SELECT max(d) FROM s2_dist) AS diameter_lb,
-           (SELECT CAST(count(*) AS BIGINT) FROM s2_dist) AS n_reached,
-           CAST({DSWEEP_HOPS} AS BIGINT) AS hop_cap
-    """
-    )
-
-
-@register("graph_diameter_double_sweep", _dsweep_oracle())
-def graph_diameter_double_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Diameter lower bound of the co-purchase graph via the
-    double-sweep heuristic (Magnien/Latapy/Habib): BFS from a
-    deterministic seed (minimum node id), take the farthest node
-    (max hop, min-id tie-break), BFS again — the second eccentricity
-    is a lower bound on the diameter that is exact on trees and
-    near-tight on real-world graphs at 2 BFS costs instead of n. The
-    graph family's missing EXTENT measure (k-hop reach and harmonic
-    closeness are per-seed; this bounds the whole graph's span).
-    Both sweeps are hop-capped at {DSWEEP_HOPS} (documented: the
-    bound reported is min(diameter_lb, cap)), keeping the unrolled
-    oracle and the BSP loop fixed-depth.
-
-    Scale shape: the textbook frontier BFS twice (one adjacency
-    equi-join + one visited anti-join per hop, lineage-cut via
-    iter_checkpoint) — identical machinery to
-    graph_bfs_frontier_hops, off the shared warehouse edge table; the
-    farthest-node pick is a 1-row TakeOrdered on the hop-distance
-    table.
-    """
-    from ..functions.partitioning import iter_checkpoint
-    from .graph import edge_table
-
-    t = Tables(spark, sf_dir)
-    edges = edge_table(spark, t, sf_dir)
-    adj = iter_checkpoint(
-        edges.unionAll(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    )
-
-    def sweep(seed_df):
-        frontier = iter_checkpoint(seed_df.select("node"))
-        visited = frontier
-        dist_frames = [frontier.select("node", F.lit(0).cast("long").alias("d"))]
-        for k in range(1, DSWEEP_HOPS + 1):
-            frontier = iter_checkpoint(
-                adj.join(frontier.select(F.col("node").alias("u")), "u")
-                .select(F.col("v").alias("node"))
-                .distinct()
-                .join(visited, "node", "left_anti")
-            )
-            visited = iter_checkpoint(visited.unionAll(frontier))
-            dist_frames.append(
-                frontier.select("node", F.lit(k).cast("long").alias("d"))
-            )
-        dist = dist_frames[0]
-        for fr in dist_frames[1:]:
-            dist = dist.unionByName(fr)
-        return dist
-
-    seed0 = adj.agg(F.min("u").alias("node"))
-    d1 = sweep(seed0)
-    far = d1.orderBy(F.col("d").desc(), F.col("node").asc()).limit(1)
-    ecc1 = d1.agg(F.max("d").alias("sweep1_ecc"))
-    d2 = sweep(far.select("node"))
-    out = (
-        seed0.select(F.col("node").alias("seed_node"))
-        .crossJoin(F.broadcast(ecc1))
-        .crossJoin(F.broadcast(far.select(F.col("node").alias("far_node"))))
-        .crossJoin(
-            F.broadcast(
-                d2.agg(
-                    F.max("d").alias("diameter_lb"),
-                    F.count(F.lit(1)).alias("n_reached"),
-                )
-            )
-        )
-        .select(
-            "seed_node",
-            "sweep1_ecc",
-            "far_node",
-            "diameter_lb",
-            "n_reached",
-            F.lit(DSWEEP_HOPS).cast("long").alias("hop_cap"),
-        )
-    )
-    return out
 
 
 # ---------------------------------------------------------------------------

@@ -1,4 +1,4 @@
-"""Round-11 direct registrations, batch A (graph + time-series).
+"""Round-11 direct registrations, batch A (time-series).
 
 Registered immediately (the post-activation window holds 21/50, so
 these land inside the driver's evaluation window); gates — raw-frame
@@ -11,8 +11,7 @@ Reference parity note: the reference (Go ingestion pipeline,
 ``/root/reference/main.go``) has no analytics surface; these extend
 the engine-added §2.C families (graph analytics, warehouse statistics,
 time-series, corpus management) along the judge-suggested round-11
-axes: a rational-valued betweenness beside the integer stress
-centrality, wavelet/PACF/Hill members of the daily-series suite, and a
+axes: wavelet/PACF/Hill members of the daily-series suite, and a
 reservoir-sample audit beside the stratified/weighted samplers.
 """
 
@@ -122,297 +121,6 @@ _SQL_DAILY_COUNTS_IDX = """
       GROUP BY a.day, a.y
     )
 """
-
-
-# ---------------------------------------------------------------------------
-# 1. Sampled-seed truncated betweenness (rational twin of stress)
-# ---------------------------------------------------------------------------
-
-BTW_SEED_MAX = 4  # same seed set as graph_stress_centrality_seeds
-
-
-def _betweenness_oracle() -> str:
-    from .graph import _SQL_EDGES
-
-    hd = sql_halfup_div
-    return (
-        _SQL_EDGES
-        + f"""
-    , adj AS MATERIALIZED (
-      SELECT u, v FROM edges UNION ALL SELECT v AS u, u AS v FROM edges
-    ), seeds AS (
-      SELECT DISTINCT u AS seed FROM adj WHERE u < {BTW_SEED_MAX}
-    ), d1 AS MATERIALIZED (
-      SELECT DISTINCT s.seed, a.v AS node
-      FROM seeds s JOIN adj a ON a.u = s.seed
-    ), s2 AS MATERIALIZED (
-      SELECT x.seed, x.node, CAST(count(*) AS HUGEINT) AS sigma2
-      FROM (
-        SELECT h.seed, a.v AS node
-        FROM d1 h JOIN adj a ON a.u = h.node
-        WHERE a.v <> h.seed
-      ) x WHERE NOT EXISTS (
-        SELECT 1 FROM d1 WHERE d1.seed = x.seed AND d1.node = x.node)
-      GROUP BY x.seed, x.node
-    ), s3 AS MATERIALIZED (
-      SELECT x.seed, x.node, CAST(sum(x.sigma2) AS HUGEINT) AS sigma3
-      FROM (
-        SELECT h.seed, a.v AS node, h.sigma2
-        FROM s2 h JOIN adj a ON a.u = h.node
-        WHERE a.v <> h.seed
-      ) x WHERE NOT EXISTS (
-        SELECT 1 FROM d1 WHERE d1.seed = x.seed AND d1.node = x.node)
-      AND NOT EXISTS (
-        SELECT 1 FROM s2 WHERE s2.seed = x.seed AND s2.node = x.node)
-      GROUP BY x.seed, x.node
-    ), e12 AS MATERIALIZED (
-      -- DAG edges layer-1 -> layer-2
-      SELECT h.seed, h.node AS v, w.node AS w, w.sigma2
-      FROM d1 h JOIN adj a ON a.u = h.node
-      JOIN s2 w ON w.seed = h.seed AND w.node = a.v
-    ), e23 AS MATERIALIZED (
-      -- DAG edges layer-2 -> layer-3
-      SELECT h.seed, h.node AS w, h.sigma2, tt.node AS t, tt.sigma3
-      FROM s2 h JOIN adj a ON a.u = h.node
-      JOIN s3 tt ON tt.seed = h.seed AND tt.node = a.v
-    ), contrib AS (
-      -- t in layer 2, v in layer 1: sigma_sv=1, sigma_vt=1, sigma_st=sigma2(t)
-      SELECT seed, v AS node, {hd('1000000::HUGEINT', 'sigma2')} AS c
-      FROM e12
-      UNION ALL
-      -- t in layer 3, v in layer 2: sigma_sv=sigma2(v), sigma_vt=1, sigma_st=sigma3(t)
-      SELECT seed, w AS node, {hd('1000000::HUGEINT * sigma2', 'sigma3')} AS c
-      FROM e23
-      UNION ALL
-      -- t in layer 3, v in layer 1: sigma_sv=1, sigma_vt=#(v->w->t DAG paths)
-      SELECT seed, v AS node, {hd('1000000::HUGEINT * svt', 'sigma3')} AS c
-      FROM (
-        SELECT p.seed, p.v, q.t, CAST(count(*) AS HUGEINT) AS svt,
-               CAST(max(q.sigma3) AS HUGEINT) AS sigma3
-        FROM e12 p JOIN e23 q ON q.seed = p.seed AND q.w = p.w
-        GROUP BY p.seed, p.v, q.t
-      )
-    ), btw AS (
-      SELECT seed, node, CAST(sum(c) AS HUGEINT) AS b_micro
-      FROM contrib GROUP BY seed, node
-    ), agg AS (
-      SELECT seed, CAST(count(*) AS BIGINT) AS n_interior,
-             CAST(sum(b_micro) AS BIGINT) AS total_micro,
-             CAST(max(b_micro) AS BIGINT) AS max_micro
-      FROM btw GROUP BY seed
-    )
-    SELECT a.seed AS seed_part, a.n_interior, a.total_micro, a.max_micro,
-           (SELECT min(b.node) FROM btw b
-            WHERE b.seed = a.seed AND b.b_micro = a.max_micro) AS max_node
-    FROM agg a ORDER BY seed_part
-    """
-    )
-
-
-@register("graph_betweenness_sampled", oracle=_betweenness_oracle())
-def graph_betweenness_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Truncated sampled-seed BETWEENNESS via Brandes' pair-dependency
-    identity: for each seed s and each target t within 3 hops, an
-    interior node v on an s-t geodesic accumulates
-    sigma_sv * sigma_vt / sigma_st — the rational-valued member of the
-    centrality family whose integer sibling
-    (``graph_stress_centrality_seeds``, roundten2.py) counts the same
-    paths unnormalized. Each pair contribution is half-up-quantized at
-    1e-6 IDENTICALLY in both engines BEFORE summation, so the result
-    is exact-integer after the single quantization point (the per-pair
-    rounding is the contract, not an approximation of a float sum).
-
-    Scale shape: same layered-BFS scaffold as stress — per-layer
-    node-keyed equi-joins on the session-cached edge table with
-    anti-joins against closer layers; the pair-dependency sums ride the
-    SAME DAG edge tables (e12, e23) rather than recomputing paths, and
-    the sigma_vt count for (layer-1 v, layer-3 t) is one equi-join of
-    those two edge lists on the shared middle node. Per-seed aggregate
-    output; argmax node via min-over-ties aggregate, no ordered limit.
-    """
-    from .graph import edge_table
-
-    t = Tables(spark, sf_dir)
-    edges = edge_table(spark, t, sf_dir)
-    adj = edges.unionAll(
-        edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).select("u", "v")
-    seeds = (
-        adj.filter(F.col("u") < BTW_SEED_MAX)
-        .select(F.col("u").alias("seed"))
-        .distinct()
-    )
-    d1 = (
-        seeds.join(adj, seeds.seed == adj.u)
-        .select("seed", F.col("v").alias("node"))
-        .distinct()
-    )
-    exp2 = (
-        d1.join(adj, d1.node == adj.u)
-        .filter(F.col("v") != F.col("seed"))
-        .select("seed", F.col("v").alias("node2"))
-    )
-    s2 = (
-        exp2.join(
-            d1.select("seed", F.col("node").alias("node2")),
-            ["seed", "node2"],
-            "left_anti",
-        )
-        .groupBy("seed", F.col("node2").alias("node"))
-        .agg(dec38(F.count(F.lit(1))).alias("sigma2"))
-    )
-    exp3 = (
-        s2.join(adj, s2.node == adj.u)
-        .filter(F.col("v") != F.col("seed"))
-        .select("seed", F.col("v").alias("node3"), "sigma2")
-    )
-    s3 = (
-        exp3.join(
-            d1.select("seed", F.col("node").alias("node3")),
-            ["seed", "node3"],
-            "left_anti",
-        )
-        .join(
-            s2.select("seed", F.col("node").alias("node3")),
-            ["seed", "node3"],
-            "left_anti",
-        )
-        .groupBy("seed", F.col("node3").alias("node"))
-        .agg(dec38(F.sum("sigma2")).alias("sigma3"))
-    )
-    e12 = (
-        d1.join(adj, d1.node == adj.u)
-        .select("seed", F.col("node").alias("vv"), F.col("v").alias("w"))
-        .join(
-            s2.select("seed", F.col("node").alias("w"), F.col("sigma2")),
-            ["seed", "w"],
-        )
-    )
-    e23 = (
-        s2.join(adj, s2.node == adj.u)
-        .select("seed", F.col("node").alias("w"), "sigma2", F.col("v").alias("tt"))
-        .join(
-            s3.select("seed", F.col("node").alias("tt"), F.col("sigma3")),
-            ["seed", "tt"],
-        )
-    )
-    m = F.lit(1_000_000).cast("decimal(38,0)")
-    c2 = e12.select(
-        "seed", F.col("vv").alias("node"), halfup_div(m, F.col("sigma2")).alias("c")
-    )
-    c3b = e23.select(
-        "seed",
-        F.col("w").alias("node"),
-        halfup_div(m * F.col("sigma2"), F.col("sigma3")).alias("c"),
-    )
-    svt = (
-        e12.select("seed", "vv", "w")
-        .join(e23.select("seed", "w", "tt", "sigma3"), ["seed", "w"])
-        .groupBy("seed", "vv", "tt")
-        .agg(dec38(F.count(F.lit(1))).alias("svt"), F.max("sigma3").alias("sigma3"))
-    )
-    c3a = svt.select(
-        "seed",
-        F.col("vv").alias("node"),
-        halfup_div(m * F.col("svt"), F.col("sigma3")).alias("c"),
-    )
-    btw = (
-        c2.unionAll(c3b)
-        .unionAll(c3a)
-        .groupBy("seed", "node")
-        .agg(F.sum("c").alias("b_micro"))
-    )
-    agg = btw.groupBy("seed").agg(
-        F.count(F.lit(1)).alias("n_interior"),
-        F.sum("b_micro").cast("long").alias("total_micro"),
-        F.max("b_micro").alias("max_micro"),
-    )
-    amax = (
-        btw.join(
-            F.broadcast(agg.select("seed", F.col("max_micro").alias("mm"))), "seed"
-        )
-        .filter(F.col("b_micro") == F.col("mm"))
-        .groupBy("seed")
-        .agg(F.min("node").alias("max_node"))
-    )
-    return (
-        agg.join(F.broadcast(amax), "seed")
-        .select(
-            F.col("seed").alias("seed_part"),
-            "n_interior",
-            "total_micro",
-            F.col("max_micro").cast("long").alias("max_micro"),
-            "max_node",
-        )
-        .orderBy("seed_part")
-    )
-
-
-# ---------------------------------------------------------------------------
-# 2. Global transitivity (closed-wedge ratio)
-# ---------------------------------------------------------------------------
-
-
-def _transitivity_oracle() -> str:
-    from .graph import _SQL_TRI_CTES
-    from ..functions.exact import sql_round_big_int_ratio
-
-    return (
-        _SQL_TRI_CTES
-        + f"""
-    , tcnt AS (SELECT CAST(count(*) AS HUGEINT) AS n_tri FROM tris),
-    wcnt AS (
-      SELECT CAST(sum(degree * (degree - 1) / 2) AS HUGEINT) AS n_wedges
-      FROM deg
-    )
-    SELECT CAST(n_tri AS BIGINT) AS n_triangles,
-           CAST(n_wedges AS BIGINT) AS n_wedges,
-           CASE WHEN n_wedges > 0 THEN
-             {sql_round_big_int_ratio('3::HUGEINT * n_tri', 'n_wedges')}
-           END AS transitivity
-    FROM tcnt, wcnt
-    """
-    )
-
-
-@register("graph_transitivity_global", oracle=_transitivity_oracle())
-def graph_transitivity_global(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """GLOBAL transitivity 3*triangles / wedges — the whole-graph
-    closure ratio complementing ``graph_local_clustering_topk`` (the
-    per-node coefficient): local answers "are THIS node's neighbors
-    connected", global answers "what fraction of ALL open wedges
-    close", and the two diverge badly on hub-heavy co-purchase graphs
-    (hubs dominate the wedge count but close few of them).
-
-    Both operands come from the shared session-cached warehouses
-    (``triangle_table`` — degree-oriented enumeration, each triangle
-    counted once at its lowest-degree apex; ``_degrees``), so the op
-    itself is two tiny aggregates and one broadcast cross of 1-row
-    frames; at 100 TB the cost lives in the warehouse build, amortized
-    across the whole graph family.
-    """
-    from ..functions.exact import round_big_int_ratio
-    from .graph import _degrees, edge_table, triangle_table
-
-    t = Tables(spark, sf_dir)
-    tri = triangle_table(spark, t, sf_dir)
-    deg = _degrees(edge_table(spark, t, sf_dir))
-    tcnt = tri.agg(dec38(F.count(F.lit(1))).alias("n_tri"))
-    wcnt = deg.agg(
-        F.sum(
-            dec38(F.col("degree")) * (F.col("degree") - 1) / F.lit(2)
-        )
-        .cast("decimal(38,0)")
-        .alias("n_wedges")
-    )
-    return tcnt.crossJoin(F.broadcast(wcnt)).select(
-        F.col("n_tri").cast("long").alias("n_triangles"),
-        F.col("n_wedges").cast("long").alias("n_wedges"),
-        F.when(
-            F.col("n_wedges") > 0,
-            round_big_int_ratio(F.lit(3).cast("decimal(38,0)") * F.col("n_tri"), F.col("n_wedges")),
-        ).alias("transitivity"),
-    )
 
 
 # ---------------------------------------------------------------------------

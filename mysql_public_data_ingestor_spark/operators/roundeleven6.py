@@ -1,11 +1,10 @@
 """Round-11 direct registrations, batch E (time-series decomposition,
-graph reach, causal-style product analytics).
+causal-style product analytics).
 
 Four completions, each oracle-paired, replica-pinned and plan-barred
 in ``tests/test_roundeleven6.py`` (same-commit gate rule): an STL-lite
 trend/seasonal/remainder decomposition of the daily series by ISO
-weekday, a depth-capped eccentricity/reach profile for the seed nodes,
-a weekend-effect difference-in-differences estimate across the
+weekday, a weekend-effect difference-in-differences estimate across the
 calendar midpoint, and a dow x hour independence chi-square.
 
 Reference parity note: the reference (Go ingestion pipeline) has no
@@ -182,144 +181,6 @@ def events_stl_dow_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
         seas.crossJoin(F.broadcast(strength))
         .select("dow", "n_days", "seasonal_micro", "seasonal_strength_micro")
         .orderBy("dow")
-    )
-
-
-# ---------------------------------------------------------------------------
-# 2. Depth-capped eccentricity / reach profile for the seed nodes
-# ---------------------------------------------------------------------------
-
-ECC_SEED_MAX = 4  # the stress/betweenness seed set
-ECC_DEPTH = 4
-
-
-def _ecc_oracle() -> str:
-    from .graph import _SQL_EDGES
-
-    return (
-        _SQL_EDGES
-        + f"""
-    , adj AS MATERIALIZED (
-      SELECT u, v FROM edges UNION ALL SELECT v AS u, u AS v FROM edges
-    ), seeds AS (
-      SELECT DISTINCT u AS seed FROM adj WHERE u < {ECC_SEED_MAX}
-    ), d1 AS MATERIALIZED (
-      SELECT DISTINCT s.seed, a.v AS node FROM seeds s JOIN adj a ON a.u = s.seed
-    ), d2 AS MATERIALIZED (
-      SELECT DISTINCT h.seed, a.v AS node
-      FROM d1 h JOIN adj a ON a.u = h.node
-      WHERE a.v <> h.seed
-        AND NOT EXISTS (SELECT 1 FROM d1 WHERE d1.seed = h.seed AND d1.node = a.v)
-    ), d3 AS MATERIALIZED (
-      SELECT DISTINCT h.seed, a.v AS node
-      FROM d2 h JOIN adj a ON a.u = h.node
-      WHERE a.v <> h.seed
-        AND NOT EXISTS (SELECT 1 FROM d1 WHERE d1.seed = h.seed AND d1.node = a.v)
-        AND NOT EXISTS (SELECT 1 FROM d2 WHERE d2.seed = h.seed AND d2.node = a.v)
-    ), d4 AS MATERIALIZED (
-      SELECT DISTINCT h.seed, a.v AS node
-      FROM d3 h JOIN adj a ON a.u = h.node
-      WHERE a.v <> h.seed
-        AND NOT EXISTS (SELECT 1 FROM d1 WHERE d1.seed = h.seed AND d1.node = a.v)
-        AND NOT EXISTS (SELECT 1 FROM d2 WHERE d2.seed = h.seed AND d2.node = a.v)
-        AND NOT EXISTS (SELECT 1 FROM d3 WHERE d3.seed = h.seed AND d3.node = a.v)
-    ), nodes AS (SELECT CAST(count(DISTINCT u) AS BIGINT) AS n_nodes FROM adj),
-    sizes AS (
-      SELECT s.seed,
-             (SELECT count(*) FROM d1 WHERE d1.seed = s.seed) AS n1,
-             (SELECT count(*) FROM d2 WHERE d2.seed = s.seed) AS n2,
-             (SELECT count(*) FROM d3 WHERE d3.seed = s.seed) AS n3,
-             (SELECT count(*) FROM d4 WHERE d4.seed = s.seed) AS n4
-      FROM seeds s
-    )
-    SELECT seed AS seed_part,
-           CAST(n1 AS BIGINT) AS n1, CAST(n2 AS BIGINT) AS n2,
-           CAST(n3 AS BIGINT) AS n3, CAST(n4 AS BIGINT) AS n4,
-           CAST(n1 + n2 + n3 + n4 AS BIGINT) AS reach,
-           CAST(CASE WHEN n4 > 0 THEN 4 WHEN n3 > 0 THEN 3
-                     WHEN n2 > 0 THEN 2 WHEN n1 > 0 THEN 1 ELSE 0 END
-                AS BIGINT) AS ecc_capped,
-           (n1 + n2 + n3 + n4 + 1 >= (SELECT n_nodes FROM nodes))
-             AS covers_component
-    FROM sizes ORDER BY seed_part
-    """
-    )
-
-
-@register("graph_eccentricity_profile_seeds", oracle=_ecc_oracle())
-def graph_eccentricity_profile_seeds(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Depth-capped BFS layer profile per seed node: |layer 1..4|,
-    total reach, the capped eccentricity (deepest non-empty layer) and
-    whether the 4-hop ball already covers the seed's whole component —
-    the per-node expansion profile that complements
-    ``graph_diameter_double_sweep`` (one global bound) and
-    ``graph_khop_reach_per_seed``-style reach with the full layer
-    breakdown a partitioner needs (layer growth rate = how fast a
-    BFS-based algorithm's frontier explodes).
-
-    Pure set algebra: each layer is one node-keyed equi-join on the
-    session-cached edge table plus anti-joins against all closer
-    layers; all outputs are exact counts.
-    """
-    from .graph import edge_table
-
-    t = Tables(spark, sf_dir)
-    edges = edge_table(spark, t, sf_dir)
-    adj = edges.unionAll(
-        edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).select("u", "v")
-    seeds = (
-        adj.filter(F.col("u") < ECC_SEED_MAX).select(F.col("u").alias("seed")).distinct()
-    )
-    layers = []
-    d1 = (
-        seeds.join(adj, seeds.seed == adj.u)
-        .select("seed", F.col("v").alias("node"))
-        .distinct()
-    )
-    layers.append(d1)
-    prev = d1
-    for _depth in (2, 3, 4):
-        nxt = (
-            prev.join(adj, prev.node == adj.u)
-            .filter(F.col("v") != F.col("seed"))
-            .select("seed", F.col("v").alias("node"))
-            .distinct()
-        )
-        for earlier in layers:
-            nxt = nxt.join(earlier.select("seed", "node"), ["seed", "node"], "left_anti")
-        layers.append(nxt)
-        prev = nxt
-    sizes = seeds
-    for i, layer in enumerate(layers, start=1):
-        cnt = layer.groupBy("seed").agg(F.count(F.lit(1)).cast("long").alias(f"n{i}"))
-        sizes = sizes.join(cnt, "seed", "left")
-    sizes = sizes.select(
-        "seed",
-        *[F.coalesce(F.col(f"n{i}"), F.lit(0)).cast("long").alias(f"n{i}") for i in (1, 2, 3, 4)],
-    )
-    nodes = adj.agg(F.countDistinct("u").cast("long").alias("n_nodes"))
-    reach = F.col("n1") + F.col("n2") + F.col("n3") + F.col("n4")
-    ecc = (
-        F.when(F.col("n4") > 0, 4)
-        .when(F.col("n3") > 0, 3)
-        .when(F.col("n2") > 0, 2)
-        .when(F.col("n1") > 0, 1)
-        .otherwise(0)
-    )
-    return (
-        sizes.crossJoin(F.broadcast(nodes))
-        .select(
-            F.col("seed").alias("seed_part"),
-            "n1",
-            "n2",
-            "n3",
-            "n4",
-            reach.cast("long").alias("reach"),
-            ecc.cast("long").alias("ecc_capped"),
-            (reach + 1 >= F.col("n_nodes")).alias("covers_component"),
-        )
-        .orderBy("seed_part")
     )
 
 

@@ -1012,113 +1012,6 @@ def join_range_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# 11. Label propagation (synchronous, fixed rounds) — community detection
-# ---------------------------------------------------------------------------
-
-LPA_ROUNDS = 2
-
-
-def lpa_label_sql() -> tuple[str, str]:
-    """DuckDB CTE chain computing the 2-round LPA labels; returns
-    (sql_prefix, final_label_rel). Shared by the LPA community-size
-    query and the round-6 modularity audit (roundsix2)."""
-    from .graph import _SQL_EDGES
-
-    sql = _SQL_EDGES + """
-    , dir AS (
-      SELECT u AS src, v AS dst FROM edges
-      UNION ALL SELECT v, u FROM edges
-    ), l0 AS (
-      SELECT DISTINCT src AS node, src AS label FROM dir
-    )"""
-    prev = "l0"
-    for k in range(1, LPA_ROUNDS + 1):
-        sql += f"""
-    , v{k} AS (
-      SELECT d.src AS node, l.label, count(*) AS cnt
-      FROM dir d JOIN {prev} l ON l.node = d.dst
-      GROUP BY 1, 2
-    ), l{k} AS (
-      SELECT node, label FROM (
-        SELECT node, label,
-               row_number() OVER (PARTITION BY node
-                                  ORDER BY cnt DESC, label) AS rn
-        FROM v{k}
-      ) WHERE rn = 1
-    )"""
-        prev = f"l{k}"
-    return sql, prev
-
-
-def _lpa_oracle() -> str:
-    sql, prev = lpa_label_sql()
-    return sql + f"""
-    SELECT label AS community, CAST(count(*) AS BIGINT) AS n_nodes,
-           CAST(min(node) AS BIGINT) AS min_node
-    FROM {prev} GROUP BY label
-    """
-
-
-def lpa_labels(spark: SparkSession, t: Tables, sf_dir: str) -> DataFrame:
-    """Final (node, label) table of the 2-round synchronous LPA over
-    the co-purchase graph — the label loop shared by
-    ``graph_label_propagation`` and the round-6 modularity audit."""
-    from .graph import edge_table
-
-    edges = edge_table(spark, t, sf_dir)
-    directed = edges.select(
-        F.col("u").alias("src"), F.col("v").alias("dst")
-    ).unionByName(edges.select(F.col("v").alias("src"), F.col("u").alias("dst")))
-    directed = directed.localCheckpoint()
-    labels = directed.select(F.col("src").alias("node")).distinct().select(
-        "node", F.col("node").alias("label")
-    )
-    for _ in range(LPA_ROUNDS):
-        votes = (
-            directed.join(
-                labels.select(F.col("node").alias("dst"), "label"), "dst"
-            )
-            .groupBy(F.col("src").alias("node"), "label")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-        )
-        # plurality with min-label tie-break as a single min(struct):
-        # (-cnt, label) orders exactly like (cnt DESC, label ASC)
-        labels = (
-            votes.groupBy("node")
-            .agg(F.min(F.struct((-F.col("cnt")).alias("neg"), F.col("label").alias("label"))).alias("b"))
-            .select("node", F.col("b.label").alias("label"))
-            .localCheckpoint()
-        )
-    return labels
-
-
-@register("graph_label_propagation", oracle=_lpa_oracle())
-def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Synchronous label propagation (2 fixed rounds) over the part
-    co-purchase graph: every node starts as its own community, then
-    repeatedly adopts its neighbors' plurality label (ties -> smallest
-    label, making each round a deterministic function of the graph) —
-    the classic near-linear community-detection primitive, here fully
-    declarative like the PageRank/k-means/GD siblings: no driver-side
-    labels, no RNG.
-
-    Scale: each round is one equi-join of the directed edge list
-    against the |V|-row label table (labels re-shuffle on node id;
-    edges reuse their partitioning) plus a per-(node, label) count and
-    an argmax-by-min(struct)-shaped rank — identical cost profile to
-    one PageRank iteration. The label table localCheckpoints between
-    rounds so round K is one join, not a K-deep recompute. Output is
-    per-community size, |V|-bounded.
-    """
-    t = Tables(spark, sf_dir)
-    labels = lpa_labels(spark, t, sf_dir)
-    return labels.groupBy(F.col("label").alias("community")).agg(
-        F.count(F.lit(1)).cast("long").alias("n_nodes"),
-        F.min("node").cast("long").alias("min_node"),
-    )
-
-
-# ---------------------------------------------------------------------------
 # 12. Time-constrained funnel (conversion within a window)
 # ---------------------------------------------------------------------------
 

@@ -8,8 +8,7 @@ Batch theme — spectral shape, distributed sketch guarantees, weighted
 graph mixing, forensic data quality, range-based volatility and
 vocabulary growth: the Wiener (log-)spectral flatness of the STL
 remainder, a union-of-local-top-k coverage audit for shard-parallel
-heavy-hitter search, strength (weighted-degree) assortativity, the
-Whipple heaping index, the Parkinson high-low volatility estimator on
+heavy-hitter search, the Whipple heaping index, the Parkinson high-low volatility estimator on
 hourly extremes, and an LNRE hapax-growth audit. Every name was
 checked against the full 563-name registry inventory before design
 (the SCALE §5j.7 authoring rule).
@@ -316,113 +315,6 @@ def sketch_shard_topk_coverage_audit(spark: SparkSession, sf_dir: str) -> DataFr
             "min_topk_count",
             "max_missed_count",
         )
-    )
-
-
-# ---------------------------------------------------------------------------
-# 3. Strength (weighted-degree) assortativity of the co-purchase graph
-# ---------------------------------------------------------------------------
-
-
-def _strength_assort_oracle() -> str:
-    from .graph import _SQL_EDGES
-    from .roundtwelve8 import _SQL_WEDGES
-
-    return _SQL_EDGES + f"""
-    , {_SQL_WEDGES.strip().rstrip()}
-    , strength AS (
-      SELECT node, CAST(sum(w) AS HUGEINT) AS s
-      FROM (SELECT u AS node, w FROM wedges
-            UNION ALL SELECT v, w FROM wedges)
-      GROUP BY node
-    ), ends AS (
-      SELECT su.s AS sx, sv.s AS sy
-      FROM edges e JOIN strength su ON su.node = e.u
-      JOIN strength sv ON sv.node = e.v
-      UNION ALL
-      SELECT sv.s, su.s
-      FROM edges e JOIN strength su ON su.node = e.u
-      JOIN strength sv ON sv.node = e.v
-    ), agg AS (
-      SELECT CAST(count(*) AS HUGEINT) AS m,
-             CAST(sum(sx) AS HUGEINT) AS sxs,
-             CAST(sum(sx * sy) AS HUGEINT) AS sxy,
-             CAST(sum(sx * sx) AS HUGEINT) AS sxx
-      FROM ends
-    )
-    SELECT CAST(m AS BIGINT) AS n_edge_ends,
-           CASE WHEN m * sxx - sxs * sxs > 0 THEN
-             CAST(floor(abs(CAST(m * sxy - sxs * sxs AS DOUBLE)) * 1000000.0
-                  / CAST(m * sxx - sxs * sxs AS DOUBLE) + 0.5) AS BIGINT)
-             * (CASE WHEN m * sxy - sxs * sxs < 0 THEN -1 ELSE 1 END)
-           END AS assortativity_micro
-    FROM agg
-    """
-
-
-@register("graph_strength_assortativity", _strength_assort_oracle())
-def graph_strength_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Strength (weighted-degree) assortativity of the co-purchase
-    graph: the Pearson correlation of endpoint STRENGTHS over the
-    symmetrized edge-end list (Newman 2002's degree assortativity with
-    s_i = sum of co-order weights in place of k_i, cf. Barrat et al.
-    2004). ``graph_degree_assortativity`` asks whether hubs link to
-    hubs by CONTACT COUNT; this asks whether heavy repeat-co-purchase
-    products wire to each other by VOLUME — the two diverge exactly
-    when weak-tie hubs (broad but shallow baskets) dominate the
-    topology.
-
-    Derivation sharing: weights via ``roundtwelve8._wedges`` /
-    ``_SQL_WEDGES`` and the canonical edge list via
-    ``graph.edge_table`` (one derivation each, multiple consumers).
-    On the symmetrized list the x- and y-marginals coincide, so the
-    correlation needs only m, sum sx, sum sx^2, sum sx*sy.
-
-    Exactness: strengths and the four sufficient statistics are exact
-    integers; the correlation is ONE shape-matched IEEE double
-    sequence (|num| * 1e6 / den, sign carried separately — since the
-    marginals coincide, den = m*sxx - sxs^2 is a positive integer and
-    no sqrt is needed), NULL-guarded for the degenerate graph.
-
-    Scale shape: strengths are a node-sized aggregate of the weighted
-    edge table; the two endpoint joins are node-keyed equi-joins
-    (strength table broadcast under the gate); one global aggregate.
-    1 row out.
-    """
-    from ..functions.partitioning import gated_broadcast
-    from .graph import edge_table
-    from .roundtwelve8 import _wedges
-
-    t = Tables(spark, sf_dir)
-    edges = edge_table(spark, t, sf_dir)
-    wedges = _wedges(t)
-    strength = (
-        wedges.select(F.col("u").alias("node"), "w")
-        .unionAll(wedges.select(F.col("v").alias("node"), "w"))
-        .groupBy("node")
-        .agg(F.sum(dec38(F.col("w"))).alias("s"))
-    )
-    su = strength.select(F.col("node").alias("u"), F.col("s").alias("s_u"))
-    sv = strength.select(F.col("node").alias("v"), F.col("s").alias("s_v"))
-    both = edges.join(gated_broadcast(su), "u").join(gated_broadcast(sv), "v")
-    ends = both.select(
-        F.col("s_u").alias("sx"), F.col("s_v").alias("sy")
-    ).unionAll(both.select(F.col("s_v").alias("sx"), F.col("s_u").alias("sy")))
-    agg = ends.agg(
-        dec38(F.count(F.lit(1))).alias("m"),
-        F.sum("sx").alias("sxs"),
-        F.sum(F.col("sx") * F.col("sy")).alias("sxy"),
-        F.sum(F.col("sx") * F.col("sx")).alias("sxx"),
-    )
-    num = F.col("m") * F.col("sxy") - F.col("sxs") * F.col("sxs")
-    den = F.col("m") * F.col("sxx") - F.col("sxs") * F.col("sxs")
-    r = F.floor(
-        F.abs(num.cast("double")) * F.lit(1000000.0) / den.cast("double")
-        + F.lit(0.5)
-    ).cast("long") * F.when(num < 0, F.lit(-1)).otherwise(F.lit(1))
-    return agg.select(
-        F.col("m").cast("long").alias("n_edge_ends"),
-        F.when(den > 0, r).alias("assortativity_micro"),
     )
 
 

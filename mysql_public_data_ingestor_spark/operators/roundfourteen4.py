@@ -1,20 +1,14 @@
-"""Round-14 direct registrations, batch Y (the VERDICT r13 item-4
-follow-throughs plus two closure-family completions).
+"""Round-14 direct registrations, batch Y (VERDICT r13 item-4
+follow-throughs).
 
-Six window-slot completions beside the activated round-14 bank, each
+Window-slot completions beside the activated round-14 bank, each
 oracle-paired, replica-pinned and plan-barred in
 ``tests/test_roundfourteen4.py`` (same-commit gate rule). Every name
 was checked against the full 575-name registry inventory before
-design (the SCALE §5j.7 authoring rule):
+design (the SCALE §5j.7 authoring rule). The batch's three graph
+queries (weighted PageRank, the C4 census, the local-bridges audit)
+live in the ``graph_*`` domain modules.
 
-* ``graph_pagerank_weighted`` — strength-weighted PageRank over the
-  weighted co-purchase graph (VERDICT r13 suggestion: "a weighted
-  PageRank beside the Katz/EC trio, reuse the gated hop-broadcast
-  plan"), 6 unrolled integer-micro iterations.
-* ``graph_square_count_c4`` — exact 4-cycle census off the
-  common-neighbor (diagonal-pair) table.
-* ``graph_local_bridges_audit`` — edges with zero triangle support
-  (local bridges) vs embedded edges, with endpoint-degree profiles.
 * ``ml_pav_reliability_diagram`` — the per-block reliability-diagram
   export of the PAV fit (VERDICT r13 suggestion, beside
   ``ml_brier_pav_decomposition``).
@@ -40,400 +34,6 @@ from pyspark.sql import functions as F
 from ..functions.exact import dec38, halfup_div, sql_halfup_div
 from ..registry import register
 from ..tables import Tables
-
-# ---------------------------------------------------------------------------
-# 1. Strength-weighted PageRank, 6 unrolled integer-micro iterations
-# ---------------------------------------------------------------------------
-
-PRW_ITERS = 6
-PRW_SCALE = 1_000_000
-PRW_DAMP_NUM, PRW_DAMP_DEN = 85, 100
-PRW_TOPK = 10
-
-
-def _prw_oracle() -> str:
-    from .roundtwelve8 import _SQL_WEDGES
-
-    parts = [
-        "WITH "
-        + _SQL_WEDGES.strip()
-        + """
-    , both_w AS (
-      SELECT u, v, w FROM wedges UNION ALL SELECT v AS u, u AS v, w FROM wedges
-    ), strength AS (
-      SELECT u, CAST(sum(w) AS BIGINT) AS s FROM both_w GROUP BY u
-    ), ew AS MATERIALIZED (
-      SELECT b.u, b.v, b.w, s.s FROM both_w b JOIN strength s USING (u)
-    ), nn AS (
-      SELECT count(*) AS n_nodes FROM strength
-    ), r0 AS MATERIALIZED (
-      SELECT u AS node, CAST(({scale} // n_nodes) AS BIGINT) AS rank_u
-      FROM strength, nn
-    )""".format(scale=PRW_SCALE),
-    ]
-    prev = "r0"
-    for i in range(1, PRW_ITERS + 1):
-        parts.append(
-            """
-    , c{i} AS MATERIALIZED (
-      SELECT e.v AS node,
-             CAST(sum(CAST(trunc(CAST(r.rank_u * e.w AS DOUBLE)
-                                 / CAST(e.s AS DOUBLE)) AS BIGINT)) AS BIGINT)
-               AS in_sum
-      FROM ew e JOIN {prev} r ON r.node = e.u
-      GROUP BY e.v
-    ), r{i} AS MATERIALIZED (
-      SELECT r.node,
-             CAST(((({dden} - {dnum}) * {scale}) // ({dden} * nn.n_nodes))
-                  + CAST(trunc(CAST(coalesce(c.in_sum, 0) * {dnum} AS DOUBLE)
-                               / {dden}.0) AS BIGINT) AS BIGINT) AS rank_u
-      FROM {prev} r LEFT JOIN c{i} c ON c.node = r.node, nn
-    )""".format(i=i, prev=prev, scale=PRW_SCALE, dnum=PRW_DAMP_NUM, dden=PRW_DAMP_DEN)
-        )
-        prev = f"r{i}"
-    parts.append(
-        f"""
-    SELECT node, rank_u AS rank_micro
-    FROM {prev} ORDER BY rank_u DESC, node LIMIT {PRW_TOPK}
-    """
-    )
-    return "".join(parts)
-
-
-@register("graph_pagerank_weighted", oracle=_prw_oracle())
-def graph_pagerank_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Strength-weighted PageRank over the weighted co-purchase graph
-    — 6 fixed power iterations where a node distributes its rank to
-    neighbors PROPORTIONALLY TO EDGE WEIGHT (co-order multiplicity)
-    rather than uniformly: share(u->v) = rank_u * w_uv / strength_u
-    (Newman 2004 weighted-network extension of Brin & Page 1998).
-    Unweighted PageRank treats a part co-ordered once exactly like a
-    part co-ordered fifty times; the weighted walk follows actual
-    purchase intensity, so the top-10 differs precisely where weight
-    concentration and degree disagree.
-
-    Derivation sharing: weighted edges via ``roundtwelve8._wedges``
-    (third consumer, unchanged derivation — no evidence invalidation);
-    the hop plan is ``graph_eigenvector_centrality_power``'s
-    gated-broadcast shape (VERDICT r13 item 4: reuse the hop-broadcast
-    plan of roundthirteen5.py).
-
-    Exactness: ranks are int64 micro-units; the per-edge share is ONE
-    double division of exact int64s (rank_u * w < 2^53, so conversion
-    is exact and the IEEE division + trunc is the identical operation
-    in both engines — the ``graph_pagerank_copurchase`` determinism
-    argument), the damped update is trunc(in_sum * 85 / 100.0). The
-    six iterations unroll as MATERIALIZED CTEs, so even this iterative
-    operator is hash-verified value-for-value.
-
-    Scale shape per hop: ONE groupBy(dst) over the strength-annotated
-    edge list (localCheckpointed once, never re-shuffled — the
-    node-sized rank table gated-broadcasts into the hop); top-k via
-    TakeOrderedAndProject. 10 rows out.
-    """
-    from ..functions.partitioning import gated_broadcast
-    from .roundtwelve8 import _wedges
-
-    t = Tables(spark, sf_dir)
-    wedges = _wedges(t)
-    both = wedges.unionByName(
-        wedges.select(F.col("v").alias("u"), F.col("u").alias("v"), "w")
-    )
-    strength = both.groupBy("u").agg(F.sum("w").cast("long").alias("s"))
-    ew = both.join(strength, "u").localCheckpoint(eager=True)
-
-    nodes = strength.select(F.col("u").alias("node"))
-    n_nodes = nodes.count()
-    base = (PRW_DAMP_DEN - PRW_DAMP_NUM) * PRW_SCALE // (PRW_DAMP_DEN * n_nodes)
-
-    ranks = nodes.select(
-        "node", F.lit(PRW_SCALE // n_nodes).cast("long").alias("rank_u")
-    ).localCheckpoint(eager=True)
-
-    for _ in range(PRW_ITERS):
-        contrib = (
-            ew.join(
-                gated_broadcast(
-                    ranks.select(F.col("node").alias("u"), "rank_u")
-                ),
-                "u",
-            )
-            .select(
-                "v",
-                (F.col("rank_u") * F.col("w") / F.col("s")).cast("long").alias("share"),
-            )
-            .groupBy(F.col("v").alias("node"))
-            .agg(F.sum("share").alias("in_sum"))
-        )
-        ranks = (
-            ranks.join(contrib, "node", "left")
-            .select(
-                "node",
-                (
-                    F.lit(base)
-                    + (
-                        F.coalesce(F.col("in_sum"), F.lit(0))
-                        * PRW_DAMP_NUM
-                        / PRW_DAMP_DEN
-                    ).cast("long")
-                ).alias("rank_u"),
-            )
-            .localCheckpoint(eager=True)
-        )
-
-    return (
-        ranks.select("node", F.col("rank_u").alias("rank_micro"))
-        .orderBy(F.col("rank_micro").desc(), "node")
-        .limit(PRW_TOPK)
-    )
-
-
-# ---------------------------------------------------------------------------
-# 2. Exact 4-cycle (C4) census via diagonal common-neighbor pairs
-# ---------------------------------------------------------------------------
-
-
-def _c4_oracle() -> str:
-    from .graph import _SQL_EDGES
-
-    return (
-        _SQL_EDGES
-        + """
-    , both_e AS (
-      SELECT u, v FROM edges UNION ALL SELECT v AS u, u AS v FROM edges
-    ), cn AS (
-      SELECT a.v AS x, b.v AS y, CAST(count(*) AS BIGINT) AS c
-      FROM both_e a JOIN both_e b ON a.u = b.u AND a.v < b.v
-      GROUP BY a.v, b.v
-    ), agg AS (
-      SELECT CAST(count(*) AS BIGINT) AS n_diag_pairs,
-             CAST(sum(CASE WHEN c >= 2 THEN 1 ELSE 0 END) AS BIGINT)
-               AS n_pairs_cn2,
-             CAST(sum(c * (c - 1) / 2) AS HUGEINT) AS sum_c2,
-             CAST(max(c) AS BIGINT) AS max_cn
-      FROM cn
-    )
-    SELECT n_diag_pairs, n_pairs_cn2,
-           CAST(sum_c2 // 2 AS BIGINT) AS n_c4, max_cn
-    FROM agg
-    """
-    )
-
-
-@register("graph_square_count_c4", oracle=_c4_oracle())
-def graph_square_count_c4(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact 4-cycle (square) census of the co-purchase graph. The
-    triangle census (``graph_triangle_count``) prices 3-cliques; C4 is
-    the canonical BIPARTITE-like motif — two parts co-ordered with the
-    same two other parts without being co-ordered themselves — and the
-    square/triangle balance separates clustered from bipartite-ish
-    regions of the graph. Identity: every C4 has exactly two diagonals
-    {u,v}, and choosing 2 of the cn(u,v) common neighbors of a
-    diagonal pair closes a square, so n_C4 = (1/2) * sum over pairs of
-    C(cn, 2) — exact, no sampling (Wang et al. 2014 rectangle
-    counting).
-
-    Exactness: pure integer counting end to end — the diagonal-pair
-    table comes off one equi-self-join of the directed edge list on
-    the shared apex, C(c,2) = c(c-1)/2 is exact (c*(c-1) always even),
-    and the final halving is an exact integer division because the sum
-    double-counts every square by construction.
-
-    Scale shape: the wedge generation is the standard sum-of-deg^2
-    equi-join every triangle count pays (hash-partitioned on the apex,
-    never all-pairs); the census aggregate is a constant-size final
-    row. 1 row out.
-    """
-    from .graph import edge_table
-
-    t = Tables(spark, sf_dir)
-    edges = edge_table(spark, t, sf_dir)
-    both = edges.unionByName(
-        edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    )
-    # Round-14 optimization (guide §2.3/§4.2); the measured ladder at
-    # sf0.1 over the 148M-wedge / 101M-distinct-pair stream:
-    #   56 s  two-column diagonal-pair key (round-14 build, rejected)
-    #   36 s  pair packed into ONE int64 key (round-14 build shape)
-    #   ~32 s of that was the 101M-distinct-key JVM hash aggregate
-    #         (partial agg only removes the 1.46x duplicate factor and
-    #         churns a multi-million-entry hash map per task)
-    #   12 s  this shape: (1) wedges generated map-side from sorted
-    #         adjacency arrays (one groupBy(u) instead of the apex
-    #         self-join — each unordered pair emitted ONCE, halving
-    #         the generated stream and removing one exchange), then
-    #         (2) hash-repartition by the packed pair key and count
-    #         per partition in ONE vectorized pass
-    #         (pyarrow.compute.value_counts inside mapInArrow), then
-    #         (3) collapse each partition's counts to a count-of-counts
-    #         histogram (at most max_cn rows per partition), so the
-    #         JVM-side final aggregate sees a few hundred rows.
-    # Exactness is unchanged: hash partitioning sends every distinct
-    # pair wholly to one partition, value_counts is exact int64
-    # counting, and the final sums run in decimal(38,0) over exact
-    # per-histogram-cell products. A degree-ordered out-out pruning
-    # pass was measured and rejected in the build round (only 3.6x
-    # wedge-volume reduction on this near-uniform graph, below its
-    # extra semi-join cost). At 100 TB this runs as a periodic derived
-    # table beside the triangle warehouse, not an interactive query.
-    adj = both.groupBy("u").agg(F.sort_array(F.collect_list("v")).alias("ns"))
-    pairs = F.flatten(
-        F.transform(
-            F.col("ns"),
-            lambda x, i: F.transform(
-                F.slice(F.col("ns"), i + 2, F.size(F.col("ns"))),
-                lambda y: F.shiftleft(x, 32) + y,
-            ),
-        )
-    )
-    wedge_p = adj.select(F.explode(pairs).alias("p"))
-    hist = wedge_p.repartition("p").mapInArrow(_cn_count_hist, "c long, m long")
-    two = F.lit(2).cast("decimal(38,0)")
-    agg = hist.agg(
-        # coalesce matches the oracle's count(*) = 0 on an empty edge
-        # set (ADVICE r14: a bare sum over the empty histogram is NULL;
-        # the oracle's other aggregates are sums/max and stay NULL)
-        F.coalesce(F.sum("m"), F.lit(0)).cast("long").alias("n_diag_pairs"),
-        F.sum(F.when(F.col("c") >= 2, F.col("m")).otherwise(0))
-        .cast("long")
-        .alias("n_pairs_cn2"),
-        F.sum(dec38(F.col("m")) * dec38(F.col("c") * (F.col("c") - 1) / 2)).alias(
-            "sum_c2"
-        ),
-        F.max("c").alias("max_cn"),
-    )
-    return agg.select(
-        "n_diag_pairs",
-        "n_pairs_cn2",
-        ((F.col("sum_c2") - F.col("sum_c2") % two) / two)
-        .cast("long")
-        .alias("n_c4"),
-        "max_cn",
-    )
-
-
-def _cn_count_hist(batches):
-    """Per-partition common-neighbor count histogram: value-count the
-    packed diagonal-pair keys of this partition (every distinct pair
-    is wholly here — upstream hash repartition on the key), then
-    value-count the counts. Emits (c, m): m pairs in this partition
-    have exactly c common neighbors — at most max_cn rows, so the
-    downstream JVM aggregate is trivially small. Exact int64 counting
-    end to end (pyarrow.compute.value_counts); one vectorized pass
-    instead of a 101M-distinct-key JVM hash aggregate (guide §4.2)."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    chunks = [batch.column(0) for batch in batches]
-    if not chunks:
-        return
-    vc = pc.value_counts(pa.chunked_array(chunks))
-    hist = pc.value_counts(vc.field("counts"))
-    yield pa.record_batch(
-        [hist.field("values"), hist.field("counts")], names=["c", "m"]
-    )
-
-
-# ---------------------------------------------------------------------------
-# 3. Local-bridges audit: zero-support edges vs embedded edges
-# ---------------------------------------------------------------------------
-
-
-def _bridges_oracle() -> str:
-    from .graph import _SQL_TRI_CTES
-
-    hd = sql_halfup_div
-    return (
-        _SQL_TRI_CTES
-        + f"""
-    , tri_edges AS (
-      SELECT DISTINCT least(a, b) AS u, greatest(a, b) AS v FROM tris
-      UNION SELECT DISTINCT least(a, c), greatest(a, c) FROM tris
-      UNION SELECT DISTINCT b, c FROM tris
-    ), flagged AS (
-      SELECT e.u, e.v,
-             CASE WHEN te.u IS NULL THEN 1 ELSE 0 END AS is_bridge,
-             du.degree AS deg_u, dv.degree AS deg_v
-      FROM edges e
-      LEFT JOIN tri_edges te ON te.u = e.u AND te.v = e.v
-      JOIN deg du ON du.node = e.u
-      JOIN deg dv ON dv.node = e.v
-    )
-    SELECT is_bridge,
-           CAST(count(*) AS BIGINT) AS n_edges,
-           CAST({hd('1000000::HUGEINT * sum(least(deg_u, deg_v))', 'count(*)')}
-                AS BIGINT) AS mean_min_deg_micro,
-           CAST({hd('1000000::HUGEINT * sum(greatest(deg_u, deg_v))', 'count(*)')}
-                AS BIGINT) AS mean_max_deg_micro
-    FROM flagged GROUP BY is_bridge ORDER BY is_bridge
-    """
-    )
-
-
-@register("graph_local_bridges_audit", oracle=_bridges_oracle())
-def graph_local_bridges_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Local-bridge audit: an edge whose endpoints share NO common
-    neighbor (zero triangle support) is a local bridge — removing it
-    raises its endpoints' distance above 2, so these are the weak-tie
-    shortcuts of Granovetter's strength-of-weak-ties argument, and in
-    a co-purchase graph they mark cross-category purchases that no
-    third product mediates. Reported: edge counts and endpoint-degree
-    profiles (mean min / mean max endpoint degree) for bridges vs
-    embedded edges — bridges systematically attach to lower-degree
-    endpoints if the periphery is where categories meet.
-
-    Derivation sharing: the session triangle warehouse
-    (``graph.triangle_table``) supplies the embedded-edge set; the
-    edge and degree tables are the session-shared ``edge_table`` /
-    ``_degrees`` (unchanged derivations — no evidence invalidation).
-
-    Exactness: pure integer counting; the two mean-degree profiles are
-    single half-up micro divisions of exact integer sums.
-
-    Scale shape: one distinct-corner unpivot of the triangle list, one
-    edge-keyed left anti-ish join (LEFT JOIN + null flag so both
-    classes aggregate in one pass), two node-sized degree joins; the
-    final aggregate is 2-key bounded. 2 rows out.
-    """
-    from .graph import _degrees, edge_table, triangle_table
-
-    t = Tables(spark, sf_dir)
-    edges = edge_table(spark, t, sf_dir)
-    tris = triangle_table(spark, t, sf_dir)
-    tri_edges = (
-        tris.select(F.least("a", "b").alias("u"), F.greatest("a", "b").alias("v"))
-        .unionAll(
-            tris.select(F.least("a", "c").alias("u"), F.greatest("a", "c").alias("v"))
-        )
-        .unionAll(tris.select(F.col("b").alias("u"), F.col("c").alias("v")))
-        .distinct()
-        .withColumn("in_tri", F.lit(1))
-    )
-    deg = _degrees(edges)
-    flagged = (
-        edges.join(tri_edges, ["u", "v"], "left")
-        .join(deg.select(F.col("node").alias("u"), F.col("degree").alias("deg_u")), "u")
-        .join(deg.select(F.col("node").alias("v"), F.col("degree").alias("deg_v")), "v")
-        .select(
-            F.when(F.col("in_tri").isNull(), 1).otherwise(0).alias("is_bridge"),
-            F.least("deg_u", "deg_v").alias("mn"),
-            F.greatest("deg_u", "deg_v").alias("mx"),
-        )
-    )
-    m6 = F.lit(1_000_000).cast("decimal(38,0)")
-    return (
-        flagged.groupBy("is_bridge")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_edges"),
-            halfup_div(m6 * F.sum(dec38(F.col("mn"))), dec38(F.count(F.lit(1))))
-            .cast("long")
-            .alias("mean_min_deg_micro"),
-            halfup_div(m6 * F.sum(dec38(F.col("mx"))), dec38(F.count(F.lit(1))))
-            .cast("long")
-            .alias("mean_max_deg_micro"),
-        )
-        .orderBy("is_bridge")
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -13,8 +13,6 @@ design (the SCALE §5j.7 authoring rule):
 
 * ``similarity_knn_reciprocity_audit`` — share of directed cosine
   kNN edges that are mutual, over the hubness-audit hash sample.
-* ``graph_friendship_paradox_audit`` — Molloy-Reed kappa = <k^2>/<k>
-  and the friendship-paradox ratio of the co-purchase graph.
 * ``events_recurrence_rate_daily`` — recurrence rate and
   determinism proxy of the daily count series at the MAD radius.
 * ``stats_phi_yule_q_gates`` — phi coefficient and Yule's Q for each
@@ -229,86 +227,6 @@ def similarity_knn_reciprocity_audit(spark: SparkSession, sf_dir: str) -> DataFr
         .alias("nn_mutual_micro"),
     )
 
-
-# ---------------------------------------------------------------------------
-# 2. Friendship paradox / Molloy-Reed criticality of the degree sequence
-# ---------------------------------------------------------------------------
-
-
-def _paradox_oracle() -> str:
-    from .graph import _SQL_EDGES
-
-    hd = sql_halfup_div
-    return (
-        _SQL_EDGES
-        + f"""
-    , deg AS (
-      SELECT node, CAST(count(*) AS BIGINT) AS k
-      FROM (SELECT u AS node FROM edges UNION ALL SELECT v FROM edges)
-      GROUP BY node
-    ), agg AS (
-      SELECT CAST(count(*) AS HUGEINT) AS n,
-             CAST(sum(k) AS HUGEINT) AS sk,
-             CAST(sum(k * k) AS HUGEINT) AS sk2
-      FROM deg
-    )
-    SELECT CAST(n AS BIGINT) AS n_nodes,
-           CAST(sk / 2 AS BIGINT) AS n_edges,
-           CAST({hd('1000000::HUGEINT * sk', 'n')} AS BIGINT) AS mean_deg_micro,
-           CAST({hd('1000000::HUGEINT * sk2', 'sk')} AS BIGINT) AS kappa_micro,
-           CAST({hd('1000000::HUGEINT * n * sk2', 'sk * sk')} AS BIGINT)
-             AS paradox_ratio_micro,
-           CASE WHEN sk2 > 2 * sk THEN 1 ELSE 0 END AS molloy_reed_supercritical
-    FROM agg
-    """
-    )
-
-
-@register("graph_friendship_paradox_audit", oracle=_paradox_oracle())
-def graph_friendship_paradox_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Degree-sequence criticality of the co-purchase graph:
-    kappa = <k^2>/<k> (the Molloy-Reed 1995 branching factor — a
-    giant component exists iff kappa > 2), the friendship-paradox
-    ratio <k^2>/<k>^2 = (your neighbors' mean degree)/(your mean
-    degree) (Feld 1991 — how much MORE connected the average
-    neighbor is than the average node), and the supercriticality
-    flag. These two moments decide whether degree-targeted
-    interventions (seed the hubs / recommend from neighbors) beat
-    uniform ones, and kappa - 1 is the expected co-purchase fan-out a
-    traversal engine should provision for.
-
-    Exactness: degrees, sum k and sum k^2 are exact
-    HUGEINT/decimal(38,0) off the session edge table; every output
-    is ONE half-up micro division of exact integers, and the
-    criticality flag is the exact integer comparison sum k^2 > 2
-    sum k.
-
-    Scale shape: one node-sized degree aggregate off the shared edge
-    list; constant-size algebra after. 1 row out.
-    """
-    from .graph import _degrees, edge_table
-
-    t = Tables(spark, sf_dir)
-    deg = _degrees(edge_table(spark, t, sf_dir))
-    agg = deg.agg(
-        dec38(F.count(F.lit(1))).alias("n"),
-        F.sum(dec38(F.col("degree"))).alias("sk"),
-        F.sum(dec38(F.col("degree")) * F.col("degree")).alias("sk2"),
-    )
-    m6 = F.lit(1_000_000).cast("decimal(38,0)")
-    two = F.lit(2).cast("decimal(38,0)")
-    return agg.select(
-        F.col("n").cast("long").alias("n_nodes"),
-        ((F.col("sk") - F.col("sk") % two) / two).cast("long").alias("n_edges"),
-        halfup_div(m6 * F.col("sk"), F.col("n")).cast("long").alias("mean_deg_micro"),
-        halfup_div(m6 * F.col("sk2"), F.col("sk")).cast("long").alias("kappa_micro"),
-        halfup_div(m6 * F.col("n") * F.col("sk2"), F.col("sk") * F.col("sk"))
-        .cast("long")
-        .alias("paradox_ratio_micro"),
-        F.when(F.col("sk2") > two * F.col("sk"), 1).otherwise(0).cast("int").alias(
-            "molloy_reed_supercritical"
-        ),
-    )
 
 # ---------------------------------------------------------------------------
 # 3. Recurrence rate + determinism proxy of the daily counts at MAD radius

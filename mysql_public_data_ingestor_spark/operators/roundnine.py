@@ -9,8 +9,7 @@ lacked — Cramér-von Mises (the quadratic ECDF two-sample test beside
 KS's supremum), per-term burstiness (the dispersion dual of tf-idf),
 interval-union coverage (the measure dual of the overlap audit), a
 generalization ladder (the k-anonymity REPAIR search, not just the
-audit), Katz centrality and harmonic closeness (bounded-hop walk
-centralities beside PageRank/LPA), and a jackknife CI on AUC.
+audit), and a jackknife CI on AUC.
 
 House discipline throughout: bounded-domain partial aggregation,
 exact integer/decimal arithmetic across the engine boundary, DuckDB
@@ -421,244 +420,6 @@ def privacy_generalization_ladder(spark: SparkSession, sf_dir: str) -> DataFrame
         )
         .orderBy("level")
     )
-
-
-# ---------------------------------------------------------------------------
-# 5. Katz centrality of seed parts (3-term walk series, no walk tables)
-# ---------------------------------------------------------------------------
-
-KATZ_SEED_MAX = 40
-# beta = 0.005: beta^k * 1e9 = {5e6, 25e3, 125} — exact integer weights
-KATZ_W1, KATZ_W2, KATZ_W3 = 5_000_000, 25_000, 125
-
-
-def _katz_oracle() -> str:
-    from .graph import _SQL_EDGES
-
-    return (
-        _SQL_EDGES
-        + f"""
-    , adj AS (
-      SELECT u, v FROM edges UNION ALL SELECT v AS u, u AS v FROM edges
-    ), deg AS (
-      SELECT u AS node, CAST(count(*) AS BIGINT) AS degree FROM adj GROUP BY u
-    ), need AS (
-      -- s2 is only consumed at the seeds (w2) and their neighbors
-      -- (w3 terms): restricting the walk-sum aggregate to this
-      -- seed-bounded node set is what keeps the op off the full graph
-      SELECT DISTINCT u AS node FROM adj WHERE u < {KATZ_SEED_MAX}
-      UNION
-      SELECT DISTINCT v AS node FROM adj WHERE u < {KATZ_SEED_MAX}
-    ), s2 AS (
-      SELECT a.u AS node, CAST(sum(d.degree) AS BIGINT) AS walk2
-      FROM adj a
-      JOIN need n ON n.node = a.u
-      JOIN deg d ON d.node = a.v
-      GROUP BY a.u
-    ), seeds AS (
-      SELECT d.node AS seed, d.degree AS w1,
-             s.walk2 AS w2,
-             (SELECT CAST(sum(s2b.walk2) AS BIGINT)
-              FROM adj a JOIN s2 s2b ON s2b.node = a.v
-              WHERE a.u = d.node) AS w3
-      FROM deg d JOIN s2 s ON s.node = d.node
-      WHERE d.node < {KATZ_SEED_MAX}
-    )
-    SELECT seed AS seed_part, w1 AS walks_1, w2 AS walks_2, w3 AS walks_3,
-           CAST(w1 * {KATZ_W1} + w2 * {KATZ_W2} + w3 * {KATZ_W3} AS BIGINT)
-             / 1000000000.0 AS katz
-    FROM seeds ORDER BY seed_part
-    """
-    )
-
-
-@register("graph_katz_centrality_seeds", oracle=_katz_oracle())
-def graph_katz_centrality_seeds(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Katz centrality (3-term walk series, beta = 0.005) of the seed
-    parts: K(u) = sum_k beta^k * walks_k(u) — the walk-counting
-    centrality between degree (k=1 only) and PageRank (infinite
-    random walk), completing the centrality family.
-
-    The crucial plan property: NO walk table is ever materialized.
-    walks_2(u) = sum of neighbor degrees and walks_3(u) = sum of
-    neighbor walks_2 are each one adjacency-join-aggregate (dynamic
-    programming on the walk recursion), and the s2 aggregate is
-    RESTRICTED to the seed-bounded node set that actually consumes it
-    (seeds + their neighbors) — the first draft ran it over the full
-    graph and measured 12.8x at the x10 fixture (denser replica graph
-    inflates Sum(deg) everywhere); the restriction is the same lesson
-    the Adamic-Adar det-ln fix recorded (SCALE.md 5g.4). The naive
-    3-hop walk enumeration would be Sum(deg^3) rows. beta^k * 1e9 are
-    exact integer weights {{5e6, 25e3, 125}}, so Katz is an exact
-    int64 dot product in 1e-9 units.
-    """
-    from .graph import _degrees, edge_table
-
-    t = Tables(spark, sf_dir)
-    edges = edge_table(spark, t, sf_dir)
-    adj = edges.unionAll(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    deg = _degrees(edges)
-    seed_adj = adj.filter(F.col("u") < KATZ_SEED_MAX)
-    need = (
-        seed_adj.select(F.col("u").alias("node"))
-        .unionAll(seed_adj.select(F.col("v").alias("node")))
-        .distinct()
-    )
-    s2 = (
-        adj.join(F.broadcast(need), adj.u == need.node)
-        .join(deg.withColumnRenamed("node", "v"), "v")
-        .groupBy(F.col("u").alias("node"))
-        .agg(F.sum("degree").alias("walk2"))
-    )
-    s3 = (
-        adj.join(s2.withColumnRenamed("node", "v"), "v")
-        .groupBy(F.col("u").alias("node"))
-        .agg(F.sum("walk2").alias("walk3"))
-    )
-    seeds = (
-        deg.filter(F.col("node") < KATZ_SEED_MAX)
-        .join(s2, "node")
-        .join(s3, "node")
-    )
-    katz_u = (
-        F.col("degree") * KATZ_W1 + F.col("walk2") * KATZ_W2 + F.col("walk3") * KATZ_W3
-    )
-    return seeds.select(
-        F.col("node").alias("seed_part"),
-        F.col("degree").alias("walks_1"),
-        F.col("walk2").alias("walks_2"),
-        F.col("walk3").alias("walks_3"),
-        (katz_u.cast("long") / F.lit(1e9)).alias("katz"),
-    ).orderBy("seed_part")
-
-
-# ---------------------------------------------------------------------------
-# 6. Truncated harmonic closeness of seed parts (exact 3-hop distances)
-# ---------------------------------------------------------------------------
-
-HARM_SEED_MAX = 10
-# half-up(1e12 / d) for d = 1, 2, 3 — exact reciprocal micro-units
-HARM_R1, HARM_R2, HARM_R3 = 10**12, 5 * 10**11, 333_333_333_333
-
-
-def _harmonic_oracle() -> str:
-    from .graph import _SQL_EDGES
-
-    return (
-        _SQL_EDGES
-        + f"""
-    , adj AS MATERIALIZED (
-      SELECT u, v FROM edges UNION ALL SELECT v AS u, u AS v FROM edges
-    ), seeds AS (
-      SELECT DISTINCT u AS seed FROM adj WHERE u < {HARM_SEED_MAX}
-    ), d1 AS MATERIALIZED (
-      SELECT DISTINCT s.seed, a.v AS node
-      FROM seeds s JOIN adj a ON a.u = s.seed
-    ), d2 AS MATERIALIZED (
-      SELECT seed, node FROM (
-        SELECT DISTINCT h.seed, a.v AS node
-        FROM d1 h JOIN adj a ON a.u = h.node
-        WHERE a.v <> h.seed
-      ) x WHERE NOT EXISTS (
-        SELECT 1 FROM d1 WHERE d1.seed = x.seed AND d1.node = x.node)
-    ), d3 AS (
-      SELECT seed, node FROM (
-        SELECT DISTINCT h.seed, a.v AS node
-        FROM d2 h JOIN adj a ON a.u = h.node
-        WHERE a.v <> h.seed
-      ) x WHERE NOT EXISTS (
-        SELECT 1 FROM d1 WHERE d1.seed = x.seed AND d1.node = x.node)
-      AND NOT EXISTS (
-        SELECT 1 FROM d2 WHERE d2.seed = x.seed AND d2.node = x.node)
-    ), counts AS (
-      SELECT s.seed,
-             (SELECT CAST(count(*) AS BIGINT) FROM d1 WHERE d1.seed = s.seed) AS n1,
-             (SELECT CAST(count(*) AS BIGINT) FROM d2 WHERE d2.seed = s.seed) AS n2,
-             (SELECT CAST(count(*) AS BIGINT) FROM d3 WHERE d3.seed = s.seed) AS n3
-      FROM seeds s
-    )
-    SELECT seed AS seed_part, n1 AS n_dist1, n2 AS n_dist2, n3 AS n_dist3,
-           CAST(n1 * {HARM_R1} + n2 * {HARM_R2} + n3 * {HARM_R3} AS BIGINT)
-             / 1000000000000.0 AS harmonic_closeness
-    FROM counts ORDER BY seed_part
-    """
-    )
-
-
-@register("graph_harmonic_closeness_seeds", oracle=_harmonic_oracle())
-def graph_harmonic_closeness_seeds(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Truncated harmonic closeness of the seed parts: H(u) =
-    sum over nodes v within 3 hops of 1/d(u,v) — the
-    disconnected-graph-safe closeness (unreachable nodes contribute 0
-    instead of breaking the mean), truncated at 3 hops the way
-    production centrality jobs bound BFS depth. Complements Katz:
-    Katz counts WALKS (hubs amplified), harmonic counts DISTINCT
-    nodes by exact distance.
-
-    Exact layered BFS: distance-d frontier = d-hop expansion
-    anti-joined against all closer layers, each layer keyed
-    (seed, node) and seed-bounded; 1/d for d = 1..3 are exact half-up
-    1e-12 reciprocals so H is an exact int64 dot product. Reads the
-    session-cached edge table; every join is a node-keyed equi-join.
-    """
-    from .graph import edge_table
-
-    t = Tables(spark, sf_dir)
-    edges = edge_table(spark, t, sf_dir)
-    adj = edges.unionAll(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    seeds = (
-        adj.select(F.col("u").alias("seed"))
-        .where(F.col("seed") < HARM_SEED_MAX)
-        .distinct()
-    )
-    d1 = (
-        seeds.join(adj, seeds.seed == adj.u)
-        .select("seed", F.col("v").alias("node"))
-        .distinct()
-    )
-    exp2 = (
-        d1.select("seed", F.col("node").alias("u"))
-        .join(adj, "u")
-        .where(F.col("v") != F.col("seed"))
-        .select("seed", F.col("v").alias("node"))
-        .distinct()
-    )
-    d2 = exp2.join(d1, ["seed", "node"], "left_anti")
-    exp3 = (
-        d2.select("seed", F.col("node").alias("u"))
-        .join(adj, "u")
-        .where(F.col("v") != F.col("seed"))
-        .select("seed", F.col("v").alias("node"))
-        .distinct()
-    )
-    d3 = exp3.join(d1, ["seed", "node"], "left_anti").join(
-        d2, ["seed", "node"], "left_anti"
-    )
-    n1 = d1.groupBy("seed").agg(F.count(F.lit(1)).alias("n_dist1"))
-    n2 = d2.groupBy("seed").agg(F.count(F.lit(1)).alias("n_dist2"))
-    n3 = d3.groupBy("seed").agg(F.count(F.lit(1)).alias("n_dist3"))
-    out = (
-        n1.join(n2, "seed", "left")
-        .join(n3, "seed", "left")
-        .select(
-            F.col("seed").alias("seed_part"),
-            "n_dist1",
-            F.coalesce(F.col("n_dist2"), F.lit(0)).alias("n_dist2"),
-            F.coalesce(F.col("n_dist3"), F.lit(0)).alias("n_dist3"),
-        )
-    )
-    h_u = (
-        F.col("n_dist1") * HARM_R1
-        + F.col("n_dist2") * HARM_R2
-        + F.col("n_dist3") * HARM_R3
-    )
-    return out.select(
-        "seed_part",
-        "n_dist1",
-        "n_dist2",
-        "n_dist3",
-        (h_u.cast("long") / F.lit(1e12)).alias("harmonic_closeness"),
-    ).orderBy("seed_part")
 
 
 # ---------------------------------------------------------------------------
@@ -1152,109 +913,6 @@ def stats_ansari_bradley_quantity(spark: SparkSession, sf_dir: str) -> DataFrame
         ((even_mean - even_mean % 2) / 2).cast("long"),
     ).otherwise(((odd_mean - odd_mean % (2 * big)) / (2 * big)).cast("long"))
     return agg.select("n", "m", "ab2", mean2.alias("ab2_null_mean"))
-
-
-# ---------------------------------------------------------------------------
-# 11. Rich-club coefficient of the co-purchase graph
-# ---------------------------------------------------------------------------
-
-RICH_CLUB_KS = [2, 4, 8, 16, 32]
-
-
-def _rich_club_oracle() -> str:
-    from .graph import _SQL_EDGES
-    from ..functions.exact import sql_round_big_int_ratio
-
-    per_k = " UNION ALL ".join(
-        f"""
-    SELECT CAST({k} AS BIGINT) AS k,
-           (SELECT CAST(count(*) AS BIGINT) FROM deg WHERE degree > {k}) AS n_k,
-           (SELECT CAST(count(*) AS BIGINT) FROM ej
-            WHERE deg_u > {k} AND deg_v > {k}) AS e_k"""
-        for k in RICH_CLUB_KS
-    )
-    return (
-        _SQL_EDGES
-        + f"""
-    , adj AS (
-      SELECT u, v FROM edges UNION ALL SELECT v AS u, u AS v FROM edges
-    ), deg AS (
-      SELECT u AS node, CAST(count(*) AS BIGINT) AS degree FROM adj GROUP BY u
-    ), ej AS (
-      SELECT e.u, e.v, du.degree AS deg_u, dv.degree AS deg_v
-      FROM edges e
-      JOIN deg du ON du.node = e.u
-      JOIN deg dv ON dv.node = e.v
-    ), levels AS ({per_k})
-    SELECT k, n_k, e_k,
-           CASE WHEN n_k >= 2 THEN
-             {sql_round_big_int_ratio('2 * e_k', 'n_k::HUGEINT * (n_k - 1)')}
-           END AS rich_club_phi
-    FROM levels ORDER BY k
-    """
-    )
-
-
-@register("graph_rich_club_coefficient", oracle=_rich_club_oracle())
-def graph_rich_club_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rich-club coefficient phi(k) = 2*E_k / (n_k*(n_k-1)) of the
-    co-purchase graph at degree thresholds k in {2,4,8,16,32}: the
-    edge density among nodes of degree > k — a rising phi(k) means
-    hub products preferentially co-occur with other hubs (the
-    "rich club"), the global-topology diagnostic beside the local
-    ones (clustering, assortativity: assortativity asks if ENDPOINT
-    degrees correlate per edge, rich-club asks if the hub SUBGRAPH is
-    dense).
-
-    One degree aggregate + one edge-to-degree join evaluated ONCE,
-    then 5 conditional aggregates over the annotated edge table (the
-    thresholds are literals, not 5 scans); phi is an exact half-up
-    decimal ratio per level. Everything is node/edge-keyed equi-joins
-    on the session-cached edge table.
-    """
-    from .graph import _degrees, edge_table
-    from ..functions.exact import round_big_int_ratio
-
-    t = Tables(spark, sf_dir)
-    edges = edge_table(spark, t, sf_dir)
-    deg = _degrees(edges)
-    ej = edges.join(
-        deg.select(F.col("node").alias("u"), F.col("degree").alias("deg_u")), "u"
-    ).join(deg.select(F.col("node").alias("v"), F.col("degree").alias("deg_v")), "v")
-    e_aggs = ej.agg(
-        *[
-            F.sum(
-                F.when((F.col("deg_u") > k) & (F.col("deg_v") > k), 1).otherwise(0)
-            ).alias(f"e_{k}")
-            for k in RICH_CLUB_KS
-        ]
-    )
-    n_aggs = deg.agg(
-        *[
-            F.sum(F.when(F.col("degree") > k, 1).otherwise(0)).alias(f"n_{k}")
-            for k in RICH_CLUB_KS
-        ]
-    )
-    both = e_aggs.crossJoin(F.broadcast(n_aggs))
-    stacked = both.select(
-        F.expr(
-            "stack({}, {}) AS (k, e_k, n_k)".format(
-                len(RICH_CLUB_KS),
-                ", ".join(f"{k}, e_{k}, n_{k}" for k in RICH_CLUB_KS),
-            )
-        )
-    )
-    return stacked.select(
-        F.col("k").cast("long").alias("k"),
-        F.col("n_k").cast("long").alias("n_k"),
-        F.col("e_k").cast("long").alias("e_k"),
-        F.when(
-            F.col("n_k") >= 2,
-            round_big_int_ratio(
-                2 * F.col("e_k"), dec38(F.col("n_k")) * (F.col("n_k") - 1)
-            ),
-        ).alias("rich_club_phi"),
-    ).orderBy("k")
 
 
 # ---------------------------------------------------------------------------

@@ -3,10 +3,8 @@ round-8 queue — VERDICT r8 item 6).
 
 Batch themes, per the verdict's follow-through list: a second
 MERGEABLE quantile sketch (bounded per-shard rank sampling — the
-summary a 1000-executor job would actually emit), weighted
-shortest-path over the cached co-purchase edge table (Dijkstra's
-semantics as bounded-round Bellman-Ford BSP, the Spark-idiomatic
-form), sequential pattern mining off the sessionization shuffle,
+summary a 1000-executor job would actually emit), sequential
+pattern mining off the sessionization shuffle,
 plus standard-toolbox members their families still lacked
 (Mann-Kendall trend, shard-skew audit, precision@k ranking metrics).
 
@@ -166,189 +164,6 @@ def sketch_rank_sample_quantile_merge(spark: SparkSession, sf_dir: str) -> DataF
             F.abs(F.lit(100) * dec38(F.col("achieved_rank")) - dec38(F.col("q")) * F.col("n")),
             F.lit(100).cast("decimal(38,0)") * F.col("n"),
         ).alias("rank_err"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# 2. Weighted shortest paths from seed parts (bounded Bellman-Ford BSP)
-# ---------------------------------------------------------------------------
-
-SSSP_SEED_MAX = 8
-SSSP_ROUNDS = 3
-SSSP_TOPK = 10
-
-
-def weighted_edge_table(spark: SparkSession, t: Tables, sf_dir: str) -> DataFrame:
-    """Session-materialized WEIGHTED co-purchase adjacency (both
-    directions, affinity distance w = 1e6 div (co_orders + 1)) — the
-    weighted sibling of ``graph.edge_table``, built with the same
-    one-shuffle basket pattern but keeping the co-order COUNT instead
-    of deduping. Rebuilding it per run was ~8 s of the 8.9 s SSSP
-    wall at sf0.1; like the unweighted edge list, it is exactly the
-    derived table a lakehouse maintains incrementally."""
-    from ..warehouse import ensure_table, fixture_tag
-
-    def build() -> DataFrame:
-        arr = F.sort_array(F.collect_set("l_partkey"))
-        baskets = (
-            t.lineitem.select("l_orderkey", "l_partkey")
-            .groupBy("l_orderkey")
-            .agg(arr.alias("parts"))
-        )
-        pairs = F.flatten(
-            F.transform(
-                F.col("parts"),
-                lambda x, i: F.transform(
-                    F.slice(F.col("parts"), i + 2, F.size(F.col("parts"))),
-                    lambda y: F.struct(x.alias("u"), y.alias("v")),
-                ),
-            )
-        )
-        pairc = (
-            baskets.select(F.explode(pairs).alias("e"))
-            .select(F.col("e.u").alias("u"), F.col("e.v").alias("v"))
-            .groupBy("u", "v")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-        )
-        w = F.expr("1000000 div (cnt + 1)")
-        return pairc.select("u", "v", w.alias("w")).sortWithinPartitions("u", "v")
-
-    tag = fixture_tag(spark, sf_dir, ("lineitem.parquet",))
-    # one direction on disk (halves the write); both directions at read
-    half = ensure_table(spark, f"graph_wedges_{tag}", build)
-    return half.unionAll(
-        half.select(F.col("v").alias("u"), F.col("u").alias("v"), "w")
-    )
-
-
-def _sssp_oracle() -> str:
-    steps = []
-    prev = "d0"
-    for i in range(1, SSSP_ROUNDS + 1):
-        steps.append(
-            f"""d{i} AS (
-      SELECT seed, node, min(dist) AS dist FROM (
-        SELECT seed, node, dist FROM {prev}
-        UNION ALL
-        SELECT p.seed, a.v AS node, p.dist + a.w AS dist
-        FROM {prev} p JOIN wadj a ON a.u = p.node
-      ) GROUP BY seed, node
-    )"""
-        )
-        prev = f"d{i}"
-    chain = ", ".join(steps)
-    return f"""
-    WITH li AS (
-      SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
-    ), pairc AS (
-      SELECT a.l_partkey AS u, b.l_partkey AS v,
-             CAST(count(*) AS BIGINT) AS cnt
-      FROM li a JOIN li b
-        ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-      GROUP BY 1, 2
-    ), wadj AS (
-      SELECT u, v, 1000000 // (cnt + 1) AS w FROM pairc
-      UNION ALL
-      SELECT v AS u, u AS v, 1000000 // (cnt + 1) AS w FROM pairc
-    ), seeds AS (
-      SELECT DISTINCT u AS seed FROM wadj WHERE u < {SSSP_SEED_MAX}
-    ), d0 AS (
-      SELECT seed, seed AS node, CAST(0 AS BIGINT) AS dist FROM seeds
-    ), {chain},
-    ranked AS (
-      SELECT seed, node, dist,
-             row_number() OVER (PARTITION BY seed ORDER BY dist, node) AS rnk
-      FROM {prev} WHERE node <> seed
-    )
-    SELECT seed AS seed_part, node AS part, dist AS dist_w,
-           CAST(rnk AS BIGINT) AS rnk
-    FROM ranked WHERE rnk <= {SSSP_TOPK}
-    """
-
-
-@register("graph_weighted_sssp_seeds", oracle=_sssp_oracle())
-def graph_weighted_sssp_seeds(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Weighted single-source shortest paths from the seed parts over
-    the co-purchase graph, affinity-distance weights w = 1e6 div
-    (co_orders + 1) (frequent co-purchase = short edge): 3 rounds of
-    Bellman-Ford relaxation — the BSP form Dijkstra's takes on a
-    shuffle engine (a priority queue is inherently sequential; bounded
-    synchronized relax-rounds are the classic Pregel/GraphX
-    formulation) — then each seed's 10 nearest parts by weighted
-    distance (VERDICT r8 item 6's "per-seed weighted shortest path").
-
-    Each round is one equi-join frontier relax + one (seed, node)
-    min-aggregate, exactly the BFS kernel (``graph_bfs_frontier_hops``)
-    with integer edge weights riding along; ``iter_checkpoint`` cuts
-    lineage between rounds. The weighted adjacency derives from the
-    same one-shuffle basket pattern as the warehouse edge table but
-    keeps the co-order COUNT (the weight) instead of deduping. All
-    distances are exact int64 micro-unit sums — no float ever enters.
-    Scale: relax joins shuffle on node keys; frontier size is
-    seed-neighborhood-bounded; the top-k ranking partitions by seed.
-    """
-    from ..functions.partitioning import iter_checkpoint
-
-    t = Tables(spark, sf_dir)
-    wadj = weighted_edge_table(spark, t, sf_dir)
-    seeds = (
-        wadj.filter(F.col("u") < SSSP_SEED_MAX).select(F.col("u").alias("seed")).distinct()
-    )
-    d = seeds.select("seed", F.col("seed").alias("node"), F.lit(0).cast("long").alias("dist"))
-    # rename the adjacency columns per round: ``d`` derives from
-    # ``wadj``, so bare wadj.v/wadj.w references are ambiguous
-    # self-join lineage after round 1
-    adj = wadj.select(
-        F.col("u").alias("_ju"), F.col("v").alias("_jv"), F.col("w").alias("_jw")
-    )
-    # frontier relaxation: only nodes whose distance IMPROVED last
-    # round can improve a neighbor this round, so each round relaxes
-    # the improved set, never the whole reached set — classic
-    # Bellman-Ford frontier pruning with bit-identical results. One
-    # full-outer join per round merges candidates into the distance
-    # table AND yields the next frontier (no union + re-aggregate),
-    # with a single lineage cut on the joined frame.
-    frontier = d
-    for _ in range(SSSP_ROUNDS):
-        cand = (
-            frontier.join(adj, F.col("node") == F.col("_ju"))
-            .select(
-                "seed",
-                F.col("_jv").alias("node"),
-                (F.col("dist") + F.col("_jw")).alias("dist"),
-            )
-            .groupBy("seed", "node")
-            .agg(F.min("dist").alias("nd"))
-        )
-        j = iter_checkpoint(
-            cand.join(
-                d.withColumnRenamed("dist", "od"), ["seed", "node"], "full"
-            ).select(
-                "seed",
-                "node",
-                F.col("nd"),
-                F.col("od"),
-            )
-        )
-        frontier = j.filter(F.col("od").isNull() | (F.col("nd") < F.col("od"))).select(
-            "seed", "node", F.col("nd").alias("dist")
-        )
-        # Spark's least() skips NULLs, so one expression covers the
-        # new-node, improved, and unchanged cases
-        d = j.select(
-            "seed", "node", F.least(F.col("nd"), F.col("od")).alias("dist")
-        )
-    w_seed = Window.partitionBy("seed").orderBy("dist", "node")
-    return (
-        d.filter(F.col("node") != F.col("seed"))
-        .withColumn("rnk", F.row_number().over(w_seed).cast("long"))
-        .filter(F.col("rnk") <= SSSP_TOPK)
-        .select(
-            F.col("seed").alias("seed_part"),
-            F.col("node").alias("part"),
-            F.col("dist").alias("dist_w"),
-            "rnk",
-        )
     )
 
 

@@ -437,123 +437,6 @@ def events_acf_daily_lags(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# 5. k-core peeling (graph family: degree -> triangles -> PR -> LPA -> this)
-# ---------------------------------------------------------------------------
-
-KCORE_K = 3
-KCORE_ROUNDS = 3
-
-
-def _kcore_oracle() -> str:
-    from .graph import _SQL_EDGES
-
-    # MATERIALIZED is load-bearing: without it DuckDB re-derives each
-    # round's CTE per reference and the unrolled chain recomputes
-    # multiplicatively (measured 14.9s -> sub-second at sf0.01)
-    sql = _SQL_EDGES + """
-    , e0 AS MATERIALIZED (SELECT u, v FROM edges)"""
-    prev = "e0"
-    for r in range(1, KCORE_ROUNDS + 1):
-        sql += f"""
-    , d{r} AS MATERIALIZED (
-      SELECT node FROM (
-        SELECT node, count(*) AS deg
-        FROM (SELECT u AS node FROM {prev} UNION ALL SELECT v FROM {prev})
-        GROUP BY node) WHERE deg >= {KCORE_K}
-    ), e{r} AS MATERIALIZED (
-      SELECT e.u, e.v FROM {prev} e
-      JOIN d{r} a ON a.node = e.u
-      JOIN d{r} b ON b.node = e.v
-    )"""
-        prev = f"e{r}"
-    parts = []
-    for r in range(1, KCORE_ROUNDS + 1):
-        parts.append(
-            f"""
-      SELECT CAST({r} AS BIGINT) AS round,
-             (SELECT CAST(count(*) AS BIGINT)
-              FROM (SELECT u AS node FROM e{r} UNION SELECT v FROM e{r}))
-               AS n_nodes,
-             (SELECT CAST(count(*) AS BIGINT) FROM e{r}) AS n_edges"""
-        )
-    sql += """
-    SELECT * FROM ("""
-    sql += " UNION ALL ".join(parts)
-    sql += """
-    )
-    """
-    return sql
-
-
-@register("graph_kcore_membership", oracle=_kcore_oracle())
-def graph_kcore_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Iterative k-core peeling (k=3, 3 synchronous rounds) over the
-    co-purchase graph: repeatedly remove nodes of degree < k and the
-    edges they carry, reporting surviving node/edge counts per round —
-    the standard dense-subgraph extractor (spam rings, core
-    communities), and the graph family's fourth iterative member after
-    PageRank / connected components / label propagation.
-
-    Each round is one degree aggregation over the current edge set plus
-    two semi-joins against the surviving-node table — the same
-    bounded-iteration declarative shape as LPA, localCheckpointed per
-    round so round R is one join, not an R-deep recompute. The fixed
-    round count makes the operator's semantics (and its unrolled-CTE
-    oracle) exact rather than run-to-convergence. Reads the
-    session-cached edge table — no per-query edge rebuild.
-    """
-    from .graph import edge_table
-
-    t = Tables(spark, sf_dir)
-    edges = edge_table(spark, t, sf_dir)
-    cur = edges.select("u", "v")
-    stats = []
-    for r in range(1, KCORE_ROUNDS + 1):
-        ends = cur.select(F.col("u").alias("node")).unionAll(
-            cur.select(F.col("v").alias("node"))
-        )
-        surv = (
-            ends.groupBy("node")
-            .agg(F.count(F.lit(1)).alias("deg"))
-            .where(F.col("deg") >= KCORE_K)
-            .select("node")
-        )
-        # lazy localCheckpoint, not eager: the three rounds' stats
-        # evaluate in ONE action over the unioned plan, with each
-        # round's edge set materialized the first time the chain
-        # reaches it — eager per-round materialization + per-round
-        # counts was 9 jobs and 3.9s warm at sf0.1. Non-eager
-        # localCheckpoint (not .persist()) so the blocks are dropped by
-        # the ContextCleaner once the Python refs go away — a persist()
-        # here pinned 3 cached edge sets in executor storage for the
-        # rest of the session (ADVICE r6). iter_checkpoint gates the
-        # executor-loss caveat (ADVICE r7): SPARK_GRAFT_ITER_PERSIST=1
-        # restores the recomputable persist path for clusters with
-        # dynamic allocation.
-        from ..functions.partitioning import iter_checkpoint
-
-        cur = iter_checkpoint(
-            cur.join(surv.select(F.col("node").alias("u")), "u")
-            .join(surv.select(F.col("node").alias("v")), "v")
-            .select("u", "v")
-        )
-        ends_r = cur.select(F.col("u").alias("node")).unionAll(
-            cur.select(F.col("v").alias("node"))
-        )
-        stats.append(
-            ends_r.agg(
-                F.lit(r).cast("long").alias("round"),
-                F.countDistinct("node").alias("n_nodes"),
-                (F.count(F.lit(1)) / 2).cast("long").alias("n_edges"),
-            )
-        )
-    out = stats[0]
-    for s in stats[1:]:
-        out = out.unionByName(s)
-    return out
-
-
-# ---------------------------------------------------------------------------
 # 6. Theil-Sen robust trend (median of pairwise slopes)
 # ---------------------------------------------------------------------------
 
@@ -1871,91 +1754,6 @@ def stats_kendall_tau_b(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(ty, "event_type")
         .select("event_type", F.col("nn").alias("n_events"), tau.alias("kendall_tau_b"))
     )
-
-
-# ---------------------------------------------------------------------------
-# 16. Degree assortativity of the co-purchase graph
-# ---------------------------------------------------------------------------
-
-
-def _assortativity_oracle() -> str:
-    from .graph import _SQL_EDGES
-
-    return (
-        _SQL_EDGES
-        + """
-    , deg AS (
-      SELECT node, CAST(count(*) AS BIGINT) AS d
-      FROM (SELECT u AS node FROM edges UNION ALL SELECT v FROM edges)
-      GROUP BY node
-    ), dir AS (
-      SELECT du.d AS x, dv.d AS y
-      FROM edges e JOIN deg du ON du.node = e.u JOIN deg dv ON dv.node = e.v
-      UNION ALL
-      SELECT dv.d AS x, du.d AS y
-      FROM edges e JOIN deg du ON du.node = e.u JOIN deg dv ON dv.node = e.v
-    ), s AS (
-      SELECT CAST(count(*) AS HUGEINT) AS m,
-             CAST(sum(x) AS HUGEINT) AS sx,
-             sum(x::HUGEINT * x) AS sxx,
-             sum(x::HUGEINT * y) AS sxy
-      FROM dir
-    )
-    SELECT CAST(m AS BIGINT) AS n_directed_edges,
-           CAST(floor(CAST(m * sxy - sx * sx AS DOUBLE)
-                      / CAST(m * sxx - sx * sx AS DOUBLE)
-                      * 1000000.0 + 0.5) AS BIGINT) / 1000000.0
-             AS assortativity
-    FROM s
-    """
-    )
-
-
-@register("graph_degree_assortativity", oracle=_assortativity_oracle())
-def graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Degree assortativity coefficient of the co-purchase graph — the
-    Pearson correlation of endpoint degrees over the directed edge
-    list (both orientations): do hubs link to hubs (assortative, r>0)
-    or to leaves (disassortative, r<0)? The one-number structural
-    summary complementing the degree histogram.
-
-    By x/y symmetry over both orientations the sufficient statistics
-    collapse to m, sum(d), sum(d^2), sum(du*dv) — exact int128/decimal
-    sums off the session-cached edge table with the (broadcastable)
-    degree table joined in; one final double ratio from identical
-    integers. Scale: degree join + one partial-aggregated sum, no
-    shuffle beyond the degree aggregation.
-    """
-    from ..functions.partitioning import gated_broadcast
-    from .graph import _degrees, edge_table
-
-    t = Tables(spark, sf_dir)
-    edges = edge_table(spark, t, sf_dir)
-    deg = _degrees(edges)
-    du = deg.select(F.col("node").alias("u"), F.col("degree").alias("xd"))
-    dv = deg.select(F.col("node").alias("v"), F.col("degree").alias("yd"))
-    j = edges.join(gated_broadcast(du), "u").join(gated_broadcast(dv), "v")
-    dirs = j.select(F.col("xd").alias("x"), F.col("yd").alias("y")).unionAll(
-        j.select(F.col("yd").alias("x"), F.col("xd").alias("y"))
-    )
-    s = dirs.agg(
-        F.count(F.lit(1)).alias("m"),
-        F.sum("x").alias("sx"),
-        F.sum(dec38(F.col("x")) * dec38(F.col("x"))).alias("sxx"),
-        F.sum(dec38(F.col("x")) * dec38(F.col("y"))).alias("sxy"),
-    )
-    m = dec38(F.col("m"))
-    sx = dec38(F.col("sx"))
-    r = (
-        F.floor(
-            (m * F.col("sxy") - sx * sx).cast("double")
-            / (m * F.col("sxx") - sx * sx).cast("double")
-            * F.lit(1e6)
-            + F.lit(0.5)
-        ).cast("long")
-        / F.lit(1e6)
-    )
-    return s.select(F.col("m").alias("n_directed_edges"), r.alias("assortativity"))
 
 
 # ---------------------------------------------------------------------------

@@ -1583,220 +1583,6 @@ def ml_split_quality_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# 16. Modularity of the LPA communities
-# ---------------------------------------------------------------------------
-
-
-def _modularity_oracle() -> str:
-    from .roundfive import lpa_label_sql
-
-    sql, lab = lpa_label_sql()
-    return sql + f"""
-    , deg AS (
-      SELECT node, CAST(count(*) AS BIGINT) AS degree
-      FROM (SELECT u AS node FROM edges UNION ALL SELECT v FROM edges)
-      GROUP BY node
-    ), m AS (
-      SELECT CAST(count(*) AS HUGEINT) AS m_edges FROM edges
-    ), intra AS (
-      SELECT CAST(count(*) AS HUGEINT) AS l_in
-      FROM edges e
-      JOIN {lab} lu ON lu.node = e.u
-      JOIN {lab} lv ON lv.node = e.v
-      WHERE lu.label = lv.label
-    ), dsq AS (
-      SELECT CAST(sum(dc * dc) AS HUGEINT) AS sum_d2
-      FROM (
-        SELECT l.label, CAST(sum(d.degree) AS HUGEINT) AS dc
-        FROM {lab} l JOIN deg d ON d.node = l.node
-        GROUP BY l.label
-      )
-    ), com AS (
-      SELECT CAST(count(DISTINCT label) AS BIGINT) AS n_communities
-      FROM {lab}
-    )
-    SELECT n_communities,
-           CAST(m.m_edges AS BIGINT) AS n_edges,
-           CAST(l_in AS BIGINT) AS intra_edges,
-           CAST(CASE WHEN (4::HUGEINT * m.m_edges * l_in - sum_d2) < 0
-             THEN -((2000000::HUGEINT
-                     * abs(4::HUGEINT * m.m_edges * l_in - sum_d2)
-                     + 4::HUGEINT * m.m_edges * m.m_edges)
-                    // (2::HUGEINT * 4 * m.m_edges * m.m_edges))
-             ELSE ((2000000::HUGEINT
-                     * (4::HUGEINT * m.m_edges * l_in - sum_d2)
-                     + 4::HUGEINT * m.m_edges * m.m_edges)
-                    // (2::HUGEINT * 4 * m.m_edges * m.m_edges))
-           END AS BIGINT) / 1000000.0 AS modularity
-    FROM com, m, intra, dsq
-    """
-
-
-@register("graph_modularity_lpa", oracle=_modularity_oracle())
-def graph_modularity_lpa(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Newman modularity Q of the 2-round LPA communities over the
-    co-purchase graph — the community-QUALITY audit the detection
-    query itself doesn't give you (``graph_label_propagation`` reports
-    sizes; Q says whether the partition beats the degree-preserving
-    random baseline).
-
-    Exactness: Q = (4m * L_in - sum_c D_c^2) / (4m^2) — intra-edge
-    count, per-community degree sums and m are exact integers, so Q is
-    ONE signed decimal-domain half-up ratio; no floats anywhere.
-
-    Scale: reuses the session-materialized edge table and the same
-    LPA label passes (localCheckpointed, one join deep); the quality
-    audit adds two label equi-joins (edge endpoints) and a
-    |communities|-row degree reduce — same cost class as one LPA
-    round.
-    """
-    from ..functions.exact import round_big_int_ratio
-    from .graph import edge_table
-    from .roundfive import lpa_labels
-
-    t = Tables(spark, sf_dir)
-    edges = edge_table(spark, t, sf_dir)
-    labels = lpa_labels(spark, t, sf_dir)
-    deg = (
-        edges.select(F.col("u").alias("node"))
-        .unionAll(edges.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("degree"))
-    )
-    m = edges.agg(F.count(F.lit(1)).alias("m_edges"))
-    lu = labels.select(F.col("node").alias("u"), F.col("label").alias("lab_u"))
-    lv = labels.select(F.col("node").alias("v"), F.col("label").alias("lab_v"))
-    intra = (
-        edges.join(lu, "u")
-        .join(lv, "v")
-        .where(F.col("lab_u") == F.col("lab_v"))
-        .agg(F.count(F.lit(1)).alias("l_in"))
-    )
-    dsq = (
-        labels.join(deg, "node")
-        .groupBy("label")
-        .agg(F.sum("degree").alias("dc"))
-        .agg(F.sum(dec38(F.col("dc")) * dec38(F.col("dc"))).alias("sum_d2"))
-    )
-    com = labels.agg(F.countDistinct("label").alias("n_communities"))
-    j = (
-        com.crossJoin(F.broadcast(m))
-        .crossJoin(F.broadcast(intra))
-        .crossJoin(F.broadcast(dsq))
-    )
-    me = dec38(F.col("m_edges"))
-    num = F.lit(4).cast("decimal(38,0)") * me * dec38(F.col("l_in")) - F.col(
-        "sum_d2"
-    )
-    den = F.lit(4).cast("decimal(38,0)") * me * me
-    return j.select(
-        "n_communities",
-        F.col("m_edges").alias("n_edges"),
-        F.col("l_in").alias("intra_edges"),
-        round_big_int_ratio(num, den).alias("modularity"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# 17. Per-node local clustering coefficient, top-k
-# ---------------------------------------------------------------------------
-
-LCC_MIN_DEGREE = 5
-LCC_TOPK = 20
-
-
-def _lcc_oracle() -> str:
-    from .graph import _SQL_TRI_CTES
-
-    return _SQL_TRI_CTES + f"""
-    , node_tri AS (
-      SELECT node, CAST(count(*) AS BIGINT) AS n_tri
-      FROM (
-        SELECT a AS node FROM tris
-        UNION ALL SELECT b FROM tris
-        UNION ALL SELECT c FROM tris
-      ) GROUP BY node
-    ), cc AS (
-      SELECT d.node, d.degree, coalesce(t.n_tri, 0) AS n_tri,
-             ((2000000::HUGEINT * 2 * coalesce(t.n_tri, 0)
-               + d.degree::HUGEINT * (d.degree - 1))
-              // (2::HUGEINT * d.degree * (d.degree - 1))) / 1000000.0
-               AS local_cc
-      FROM deg d LEFT JOIN node_tri t ON t.node = d.node
-      WHERE d.degree >= {LCC_MIN_DEGREE}
-    )
-    SELECT CAST(node AS BIGINT) AS node, degree, n_tri, local_cc
-    FROM cc
-    ORDER BY local_cc DESC, n_tri DESC, node
-    LIMIT {LCC_TOPK}
-    """
-
-
-@register("graph_local_clustering_topk", oracle=_lcc_oracle())
-def graph_local_clustering_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-{LCC_TOPK} nodes by LOCAL clustering coefficient (degree >=
-    {LCC_MIN_DEGREE}): per-node triangle membership over the
-    co-purchase graph, cc_v = 2T_v / (d_v (d_v - 1)) — the "how
-    clique-like is this product's neighborhood" ranking
-    (``graph_triangle_count`` reports the single global coefficient;
-    this attributes triangles to nodes).
-
-    Triangles come from the session-shared ``graph.triangle_table``
-    (the same degree-ordered wedge closure the global count uses —
-    each triangle found once at its unique low-degree apex; VERDICT r7
-    item 3: the two queries used to run the enumeration twice, and a
-    per-construction localCheckpoint here defeated warm runs), then
-    credit all three corners through a 3-way unpivot — never a
-    per-node neighborhood self-join. The ranking ties on
-    (coefficient, triangles, node id), a total order, and the
-    coefficient itself is an exact integer half-up ratio, so the
-    top-k cut is deterministic; the global sort resolves as a
-    TakeOrderedAndProject (per-partition heaps + driver merge of
-    {LCC_TOPK}-row tops), not a full sort.
-    """
-    from ..functions.exact import round_int_ratio
-    from .graph import edge_table, triangle_table
-
-    t = Tables(spark, sf_dir)
-    edges = edge_table(spark, t, sf_dir)
-    deg = (
-        edges.select(F.col("u").alias("node"))
-        .unionAll(edges.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("degree"))
-    )
-    tris = triangle_table(spark, t, sf_dir)
-    node_tri = (
-        tris.select(F.col("a").alias("node"))
-        .unionAll(tris.select(F.col("b").alias("node")))
-        .unionAll(tris.select(F.col("c").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("n_tri"))
-    )
-    cc = (
-        deg.where(F.col("degree") >= LCC_MIN_DEGREE)
-        .join(node_tri, "node", "left")
-        .select(
-            "node",
-            "degree",
-            F.coalesce(F.col("n_tri"), F.lit(0)).alias("n_tri"),
-        )
-        .select(
-            "node",
-            "degree",
-            "n_tri",
-            round_int_ratio(
-                F.lit(2) * F.col("n_tri"),
-                F.col("degree") * (F.col("degree") - 1),
-            ).alias("local_cc"),
-        )
-    )
-    return cc.orderBy(
-        F.col("local_cc").desc(), F.col("n_tri").desc(), F.col("node")
-    ).limit(LCC_TOPK)
-
-
-# ---------------------------------------------------------------------------
 # 18. Incremental decontamination of an incoming batch
 # ---------------------------------------------------------------------------
 

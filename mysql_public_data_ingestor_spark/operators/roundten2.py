@@ -1201,212 +1201,6 @@ def events_user_activity_lorenz_deciles(spark: SparkSession, sf_dir: str) -> Dat
 
 
 # ---------------------------------------------------------------------------
-# 11. Truncated stress centrality from seed parts (integer-exact)
-# ---------------------------------------------------------------------------
-
-STRESS_SEED_MAX = 4
-
-
-def _stress_oracle() -> str:
-    from .graph import _SQL_EDGES
-
-    return (
-        _SQL_EDGES
-        + f"""
-    , adj AS MATERIALIZED (
-      SELECT u, v FROM edges UNION ALL SELECT v AS u, u AS v FROM edges
-    ), seeds AS (
-      SELECT DISTINCT u AS seed FROM adj WHERE u < {STRESS_SEED_MAX}
-    ), d1 AS MATERIALIZED (
-      SELECT DISTINCT s.seed, a.v AS node
-      FROM seeds s JOIN adj a ON a.u = s.seed
-    ), s2 AS MATERIALIZED (
-      SELECT x.seed, x.node, CAST(count(*) AS BIGINT) AS sigma2
-      FROM (
-        SELECT h.seed, a.v AS node
-        FROM d1 h JOIN adj a ON a.u = h.node
-        WHERE a.v <> h.seed
-      ) x WHERE NOT EXISTS (
-        SELECT 1 FROM d1 WHERE d1.seed = x.seed AND d1.node = x.node)
-      GROUP BY x.seed, x.node
-    ), s3 AS MATERIALIZED (
-      SELECT x.seed, x.node, CAST(sum(x.sigma2) AS BIGINT) AS sigma3
-      FROM (
-        SELECT h.seed, a.v AS node, h.sigma2
-        FROM s2 h JOIN adj a ON a.u = h.node
-        WHERE a.v <> h.seed
-      ) x WHERE NOT EXISTS (
-        SELECT 1 FROM d1 WHERE d1.seed = x.seed AND d1.node = x.node)
-      AND NOT EXISTS (
-        SELECT 1 FROM s2 WHERE s2.seed = x.seed AND s2.node = x.node)
-      GROUP BY x.seed, x.node
-    ), pf2 AS MATERIALIZED (
-      SELECT w.seed, w.node,
-             CAST(count(t.node) AS BIGINT) AS pf
-      FROM s2 w
-      LEFT JOIN adj a ON a.u = w.node
-      LEFT JOIN s3 t ON t.seed = w.seed AND t.node = a.v
-      GROUP BY w.seed, w.node
-    ), pf1 AS (
-      SELECT w.seed, w.node,
-             CAST(coalesce(sum(1 + p.pf), 0) AS BIGINT) AS pf
-      FROM d1 w
-      LEFT JOIN adj a ON a.u = w.node
-      LEFT JOIN pf2 p ON p.seed = w.seed AND p.node = a.v
-      GROUP BY w.seed, w.node
-    ), interior AS (
-      SELECT seed, node, 1::BIGINT AS sigma, pf, 1::BIGINT * pf AS stress
-      FROM pf1
-      UNION ALL
-      SELECT w.seed, w.node, w.sigma2 AS sigma, p.pf, w.sigma2 * p.pf AS stress
-      FROM s2 w JOIN pf2 p ON p.seed = w.seed AND p.node = w.node
-    ), agg AS (
-      SELECT seed,
-             CAST(count(*) AS BIGINT) AS n_interior,
-             CAST(sum(stress) AS BIGINT) AS total_stress,
-             CAST(max(stress) AS BIGINT) AS max_stress
-      FROM interior GROUP BY seed
-    )
-    SELECT a.seed AS seed_part, a.n_interior, a.total_stress, a.max_stress,
-           (SELECT min(i.node) FROM interior i
-            WHERE i.seed = a.seed AND i.stress = a.max_stress)
-             AS max_stress_node
-    FROM agg a ORDER BY seed_part
-    """
-    )
-
-
-@register("graph_stress_centrality_seeds", oracle=_stress_oracle())
-def graph_stress_centrality_seeds(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Truncated STRESS centrality from the seed parts: for each
-    source s, every node v within 2 hops accumulates sigma_sv *
-    paths_from(v) — the number of shortest s->t paths THROUGH v for
-    targets t within 3 hops. Stress is the integer-exact member of
-    the betweenness family (betweenness divides by sigma_st and goes
-    rational; stress counts the same paths unnormalized), so the
-    bounded-depth "betweenness approximation" the graph family lacked
-    ships with zero float arithmetic: path counts forward (sigma_1=1,
-    sigma_2 = sum of d1-neighbors' sigma), DAG path counts backward
-    (pf(v) = sum over successors (1 + pf(w))), stress = sigma * pf.
-
-    Same layered-BFS shape as harmonic closeness: each layer is one
-    node-keyed equi-join on the session-cached edge table plus
-    anti-joins against closer layers; the backward pass is two more
-    joins along the SAME DAG edges. Per-seed aggregate output (4
-    rows); the argmax node is a min-over-ties final aggregate, not an
-    ordered limit.
-    """
-    from .graph import edge_table
-
-    t = Tables(spark, sf_dir)
-    edges = edge_table(spark, t, sf_dir)
-    adj = edges.unionAll(
-        edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).select("u", "v")
-    seeds = adj.filter(F.col("u") < STRESS_SEED_MAX).select(
-        F.col("u").alias("seed")
-    ).distinct()
-    d1 = (
-        seeds.join(adj, seeds.seed == adj.u)
-        .select("seed", F.col("v").alias("node"))
-        .distinct()
-    )
-    # sigma2: count of d1 predecessors per distance-2 node
-    exp2 = (
-        d1.join(adj, d1.node == adj.u)
-        .filter(F.col("v") != F.col("seed"))
-        .select("seed", F.col("v").alias("node2"))
-    )
-    s2 = (
-        exp2.join(
-            d1.select("seed", F.col("node").alias("node2")),
-            ["seed", "node2"],
-            "left_anti",
-        )
-        .groupBy("seed", F.col("node2").alias("node"))
-        .agg(F.count(F.lit(1)).alias("sigma2"))
-    )
-    exp3 = (
-        s2.join(adj, s2.node == adj.u)
-        .filter(F.col("v") != F.col("seed"))
-        .select("seed", F.col("v").alias("node3"), "sigma2")
-    )
-    s3 = (
-        exp3.join(
-            d1.select("seed", F.col("node").alias("node3")), ["seed", "node3"], "left_anti"
-        )
-        .join(
-            s2.select("seed", F.col("node").alias("node3")), ["seed", "node3"], "left_anti"
-        )
-        .groupBy("seed", F.col("node3").alias("node"))
-        .agg(F.sum("sigma2").alias("sigma3"))
-    )
-    # backward: pf2 = number of d3 successors; pf1 = sum over d2
-    # successors of (1 + pf2)
-    pf2 = (
-        s2.select("seed", "node", "sigma2")
-        .join(adj, s2.node == adj.u, "left")
-        .join(
-            s3.select("seed", F.col("node").alias("v"), F.lit(1).alias("hit3")),
-            ["seed", "v"],
-            "left",
-        )
-        .groupBy("seed", "node", "sigma2")
-        .agg(F.count("hit3").alias("pf"))
-    )
-    pf1 = (
-        d1.join(adj, d1.node == adj.u, "left")
-        .join(
-            pf2.select(
-                "seed", F.col("node").alias("v"), F.col("pf").alias("pf_w")
-            ),
-            ["seed", "v"],
-            "left",
-        )
-        .groupBy("seed", "node")
-        .agg(
-            F.coalesce(
-                F.sum(
-                    F.when(F.col("pf_w").isNotNull(), F.lit(1) + F.col("pf_w"))
-                ),
-                F.lit(0),
-            )
-            .cast("long")
-            .alias("pf")
-        )
-    )
-    interior = pf1.select(
-        "seed", "node", F.lit(1).cast("long").alias("sigma"), "pf",
-        F.col("pf").cast("long").alias("stress"),
-    ).unionAll(
-        pf2.select(
-            "seed", "node", F.col("sigma2").alias("sigma"), "pf",
-            (F.col("sigma2") * F.col("pf")).cast("long").alias("stress"),
-        )
-    )
-    agg = interior.groupBy("seed").agg(
-        F.count(F.lit(1)).alias("n_interior"),
-        F.sum("stress").cast("long").alias("total_stress"),
-        F.max("stress").alias("max_stress"),
-    )
-    amax = (
-        interior.join(
-            F.broadcast(agg.select("seed", F.col("max_stress").alias("ms"))), "seed"
-        )
-        .filter(F.col("stress") == F.col("ms"))
-        .groupBy("seed")
-        .agg(F.min("node").alias("max_stress_node"))
-    )
-    return agg.join(amax, "seed").select(
-        F.col("seed").alias("seed_part"),
-        "n_interior",
-        "total_stress",
-        "max_stress",
-        "max_stress_node",
-    )
-
-
-# ---------------------------------------------------------------------------
 # 12. Difference-sign (up/down) runs test on the daily series
 # ---------------------------------------------------------------------------
 

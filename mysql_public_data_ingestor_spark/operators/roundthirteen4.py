@@ -4,10 +4,9 @@ Gates: ``tests/test_roundthirteen4.py``; SCALE.md §5o records the
 ×10 ladder.
 
 Batch theme — coverage, deployment arithmetic and budget
-concentration: which parts the co-purchase graph can see at all, how
-the classifier's fixed operating point degrades under prevalence
-shift, and how concentrated the corpus token budget is across
-documents. Every name was checked against the full registry
+concentration: how the classifier's fixed operating point degrades
+under prevalence shift, and how concentrated the corpus token budget
+is across documents. Every name was checked against the full registry
 inventory before design.
 
 Reference parity note: the reference (Go ingestion pipeline) has no
@@ -22,88 +21,6 @@ from pyspark.sql import functions as F
 from ..functions.exact import dec38, halfup_div, sql_halfup_div
 from ..registry import register
 from ..tables import Tables
-
-# ---------------------------------------------------------------------------
-# 1. Co-purchase graph coverage audit
-# ---------------------------------------------------------------------------
-
-
-def _coverage_oracle() -> str:
-    from .graph import _SQL_EDGES
-
-    hd = sql_halfup_div
-    return _SQL_EDGES + f"""
-    , nodes AS (
-      SELECT DISTINCT node FROM (
-        SELECT u AS node FROM edges UNION ALL SELECT v FROM edges
-      )
-    ), pt AS (
-      SELECT CAST(count(*) AS BIGINT) AS n_parts FROM part
-    ), sold AS (
-      SELECT CAST(count(DISTINCT l_partkey) AS BIGINT) AS n_sold FROM lineitem
-    ), ng AS (SELECT CAST(count(*) AS BIGINT) AS n_in_graph FROM nodes)
-    SELECT pt.n_parts, sold.n_sold, ng.n_in_graph,
-           (pt.n_parts - sold.n_sold) AS n_never_sold,
-           (sold.n_sold - ng.n_in_graph) AS n_sold_isolated,
-           CAST({hd('1000000::HUGEINT * ng.n_in_graph', 'pt.n_parts')} AS BIGINT)
-             AS graph_coverage_micro,
-           CAST({hd('1000000::HUGEINT * ng.n_in_graph', 'sold.n_sold')} AS BIGINT)
-             AS sold_coverage_micro
-    FROM pt, sold, ng
-    """
-
-
-@register("graph_copurchase_coverage_audit", _coverage_oracle())
-def graph_copurchase_coverage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Coverage audit of the co-purchase graph against the part
-    dimension: how many parts exist, how many were ever sold, how
-    many appear in at least one co-purchase edge, and the two
-    shortfalls — never-sold parts and sold-but-isolated parts (only
-    ever purchased alone). Every graph-family statistic implicitly
-    conditions on "node is in the graph"; this op prices that
-    selection (a 60% coverage means PageRank/link-prediction scores
-    exist for 60% of the catalog — the first number a recommender
-    integration asks). The dimension-reconciliation member of the
-    graph shelf, off the SHARED ``graph.edge_table``.
-
-    Exactness: pure exact distinct counts and two half-up micro
-    shares.
-
-    Scale shape: edge list from the session warehouse; one lineitem
-    distinct aggregate; one part count; scalar algebra.
-    """
-    from .graph import edge_table
-
-    t = Tables(spark, sf_dir)
-    edges = edge_table(spark, t, sf_dir)
-    nodes = (
-        edges.select(F.col("u").alias("node"))
-        .unionAll(edges.select(F.col("v").alias("node")))
-        .distinct()
-    )
-    pt = t.part.agg(F.count(F.lit(1)).cast("long").alias("n_parts"))
-    sold = t.lineitem.agg(
-        F.countDistinct("l_partkey").cast("long").alias("n_sold")
-    )
-    ng = nodes.agg(F.count(F.lit(1)).cast("long").alias("n_in_graph"))
-    m6 = F.lit(1_000_000).cast("decimal(38,0)")
-    return (
-        pt.crossJoin(F.broadcast(sold))
-        .crossJoin(F.broadcast(ng))
-        .select(
-            "n_parts",
-            "n_sold",
-            "n_in_graph",
-            (F.col("n_parts") - F.col("n_sold")).alias("n_never_sold"),
-            (F.col("n_sold") - F.col("n_in_graph")).alias("n_sold_isolated"),
-            halfup_div(m6 * dec38(F.col("n_in_graph")), dec38(F.col("n_parts")))
-            .cast("long")
-            .alias("graph_coverage_micro"),
-            halfup_div(m6 * dec38(F.col("n_in_graph")), dec38(F.col("n_sold")))
-            .cast("long")
-            .alias("sold_coverage_micro"),
-        )
-    )
 
 
 # ---------------------------------------------------------------------------

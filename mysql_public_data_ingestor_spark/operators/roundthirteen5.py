@@ -1,19 +1,11 @@
 """Round-13 direct registrations, batch T — the VERDICT r12 item-3
-follow-throughs (weighted clustering beside ``graph_weighted_triangles``,
-an eigenvector-centrality power iteration reusing the
-``embedding_cov_top_eigen_power`` broadcast-iterate pattern, a
-PAV-calibrated Brier decomposition beside the PAV/ROC-hull audit, and
+follow-throughs (a PAV-calibrated Brier decomposition beside the PAV/ROC-hull audit, and
 the trend-strength summary off the shared STL derivation) plus the
 Kuiper two-sample test. Each op is oracle-paired, replica-pinned and
 plan-barred in ``tests/test_roundthirteen5.py`` (same-commit gate
 rule). Every name was checked against the full 538-name registry
 inventory before design (the SCALE §5j.7 authoring rule).
 
-* ``graph_weighted_clustering_barrat`` — Barrat et al. (2004) weighted
-  local clustering for the top co-purchase hubs, sharing the triangle
-  warehouse and the weighted-edge derivation.
-* ``graph_eigenvector_centrality_power`` — 6 unrolled power iterations
-  with L-infinity renormalization in exact integer micro-units.
 * ``ml_brier_pav_decomposition`` — Murphy decomposition of the Brier
   score over the PAV (isotonic) calibration blocks.
 * ``events_stl_trend_strength`` — FPP-style trend/seasonal strength
@@ -34,304 +26,6 @@ from pyspark.sql import functions as F
 from ..functions.exact import dec38, halfup_div, sql_halfup_div
 from ..registry import register
 from ..tables import Tables
-
-# ---------------------------------------------------------------------------
-# 1. Barrat weighted local clustering for the top co-purchase hubs
-# ---------------------------------------------------------------------------
-
-BARRAT_TOPK = 10
-
-
-def _barrat_oracle() -> str:
-    from .graph import _SQL_TRI_CTES
-    from .roundtwelve8 import _SQL_WEDGES
-
-    hd = sql_halfup_div
-    return _SQL_TRI_CTES + f"""
-    , {_SQL_WEDGES.strip().rstrip()}
-    , tw AS (
-      SELECT t.a, t.b, t.c, w1.w AS w_ab, w2.w AS w_ac, w3.w AS w_bc
-      FROM tris t
-      JOIN wedges w1 ON w1.u = least(t.a, t.b) AND w1.v = greatest(t.a, t.b)
-      JOIN wedges w2 ON w2.u = least(t.a, t.c) AND w2.v = greatest(t.a, t.c)
-      JOIN wedges w3 ON w3.u = t.b AND w3.v = t.c
-    ), corners AS (
-      SELECT a AS node, (w_ab + w_ac) AS wp FROM tw
-      UNION ALL SELECT b, (w_ab + w_bc) FROM tw
-      UNION ALL SELECT c, (w_ac + w_bc) FROM tw
-    ), csum AS (
-      SELECT node, CAST(count(*) AS BIGINT) AS n_tri,
-             CAST(sum(wp) AS HUGEINT) AS wsum
-      FROM corners GROUP BY node
-    ), strength AS (
-      SELECT node, CAST(sum(w) AS HUGEINT) AS s
-      FROM (SELECT u AS node, w FROM wedges
-            UNION ALL SELECT v, w FROM wedges)
-      GROUP BY node
-    )
-    SELECT d.node, d.degree, CAST(st.s AS BIGINT) AS strength,
-           coalesce(c.n_tri, 0) AS n_tri,
-           CASE WHEN d.degree >= 2 AND c.n_tri IS NOT NULL THEN
-             CAST({hd('1000000::HUGEINT * c.wsum',
-                      '2::HUGEINT * st.s * (d.degree - 1)')} AS BIGINT)
-           ELSE 0 END AS barrat_micro,
-           CAST({hd('1000000::HUGEINT * 2 * coalesce(c.n_tri, 0)',
-                    'CAST(d.degree AS HUGEINT) * (d.degree - 1)')} AS BIGINT)
-             AS clustering_micro
-    FROM deg d
-    JOIN strength st ON st.node = d.node
-    LEFT JOIN csum c ON c.node = d.node
-    WHERE d.degree >= 2
-    ORDER BY strength DESC, d.node
-    LIMIT {BARRAT_TOPK}
-    """
-
-
-@register("graph_weighted_clustering_barrat", oracle=_barrat_oracle())
-def graph_weighted_clustering_barrat(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Barrat weighted local clustering coefficient (Barrat, Barthélemy,
-    Pastor-Satorras & Vespignani, PNAS 2004) for the top-10 strongest
-    co-purchase hubs: C_w(i) = (1 / (s_i (k_i - 1))) * sum over
-    triangles at i of (w_ij + w_ih)/2, where s_i is the node strength
-    (sum of incident co-order weights). ``graph_local_clustering_topk``
-    says how CLOSED a hub's neighborhood is; this says whether the
-    closure happens through the hub's STRONG ties (repeat co-purchase
-    communities) or its weak ones — C_w > C means triangles concentrate
-    on strong edges. The unweighted coefficient rides along for the
-    comparison.
-
-    Derivation sharing: triangles come from the session-shared
-    ``graph.triangle_table`` (one enumeration for the whole closure
-    family); weights come from ``roundtwelve8._wedges`` — the SAME
-    derivation ``graph_weighted_triangles`` consumes, extracted (not
-    rewritten) in round 13.
-
-    Exactness: corner weight sums, strengths and degrees are exact
-    integers; the /2 of the Barrat pair-average folds into the
-    denominator (2 s_i (k_i - 1)); ONE half-up micro division per
-    output cell.
-
-    Scale shape: three equi-joins of the triangle warehouse against the
-    (u, v)-grouped weighted edge table (the graph_weighted_triangles
-    plan), a 3-corner unpivot feeding a node-keyed aggregate, and
-    node-sized strength/degree joins; top-k via TakeOrderedAndProject.
-    No wedge re-enumeration, no cartesian.
-    """
-    from .graph import _degrees, edge_table, triangle_table
-    from .roundtwelve8 import _wedges
-
-    t = Tables(spark, sf_dir)
-    tris = triangle_table(spark, t, sf_dir)
-    # the three corner-weight joins and the strength aggregate are four
-    # plan branches over the SAME weighted-edge table; since round 14
-    # _wedges is warehouse-materialized (one parquet table per session),
-    # all four branches scan it directly — the former per-query
-    # localCheckpoint (7.3 s -> ~4 s when the aggregate was rebuilt
-    # per branch) is redundant over a materialized table.
-    wedges = _wedges(t)
-    w1 = wedges.select(
-        F.col("u").alias("u1"), F.col("v").alias("v1"), F.col("w").alias("w_ab")
-    )
-    w2 = wedges.select(
-        F.col("u").alias("u2"), F.col("v").alias("v2"), F.col("w").alias("w_ac")
-    )
-    w3 = wedges.select(
-        F.col("u").alias("u3"), F.col("v").alias("v3"), F.col("w").alias("w_bc")
-    )
-    tw = (
-        tris.join(
-            w1,
-            (F.col("u1") == F.least("a", "b")) & (F.col("v1") == F.greatest("a", "b")),
-        )
-        .join(
-            w2,
-            (F.col("u2") == F.least("a", "c")) & (F.col("v2") == F.greatest("a", "c")),
-        )
-        .join(w3, (F.col("u3") == F.col("b")) & (F.col("v3") == F.col("c")))
-        .select("a", "b", "c", "w_ab", "w_ac", "w_bc")
-    )
-    corners = (
-        tw.select(F.col("a").alias("node"), (F.col("w_ab") + F.col("w_ac")).alias("wp"))
-        .unionAll(
-            tw.select(
-                F.col("b").alias("node"), (F.col("w_ab") + F.col("w_bc")).alias("wp")
-            )
-        )
-        .unionAll(
-            tw.select(
-                F.col("c").alias("node"), (F.col("w_ac") + F.col("w_bc")).alias("wp")
-            )
-        )
-    )
-    csum = corners.groupBy("node").agg(
-        F.count(F.lit(1)).cast("long").alias("n_tri"),
-        F.sum(dec38(F.col("wp"))).alias("wsum"),
-    )
-    strength = (
-        wedges.select(F.col("u").alias("node"), "w")
-        .unionAll(wedges.select(F.col("v").alias("node"), "w"))
-        .groupBy("node")
-        .agg(F.sum(dec38(F.col("w"))).alias("s"))
-    )
-    deg = _degrees(edge_table(spark, t, sf_dir))
-    m6 = F.lit(1_000_000).cast("decimal(38,0)")
-    out = (
-        deg.join(strength, "node")
-        .join(csum, "node", "left")
-        .where(F.col("degree") >= 2)
-        .select(
-            "node",
-            "degree",
-            F.col("s").cast("long").alias("strength"),
-            F.coalesce(F.col("n_tri"), F.lit(0).cast("long")).alias("n_tri"),
-            F.when(
-                F.col("n_tri").isNotNull(),
-                halfup_div(
-                    m6 * F.col("wsum"),
-                    F.lit(2).cast("decimal(38,0)")
-                    * F.col("s")
-                    * dec38(F.col("degree") - 1),
-                ).cast("long"),
-            )
-            .otherwise(F.lit(0).cast("long"))
-            .alias("barrat_micro"),
-            halfup_div(
-                m6 * F.lit(2).cast("decimal(38,0)")
-                * dec38(F.coalesce(F.col("n_tri"), F.lit(0).cast("long"))),
-                dec38(F.col("degree")) * dec38(F.col("degree") - 1),
-            )
-            .cast("long")
-            .alias("clustering_micro"),
-        )
-    )
-    return out.orderBy(F.col("strength").desc(), "node").limit(BARRAT_TOPK)
-
-
-# ---------------------------------------------------------------------------
-# 2. Eigenvector centrality: 6 unrolled power iterations, integer micro
-# ---------------------------------------------------------------------------
-
-EC_ITERS = 6
-EC_SCALE = 1_000_000
-EC_TOPK = 10
-
-
-def _ec_oracle() -> str:
-    from .graph import _SQL_EDGES
-
-    hd = sql_halfup_div
-    parts = [
-        _SQL_EDGES,
-        """
-    , both_e AS (
-      SELECT u, v FROM edges UNION ALL SELECT v AS u, u AS v FROM edges
-    ), e0 AS MATERIALIZED (
-      SELECT DISTINCT u AS node, CAST({scale} AS HUGEINT) AS x FROM both_e
-    )""".format(scale=EC_SCALE),
-    ]
-    prev = "e0"
-    for i in range(1, EC_ITERS + 1):
-        parts.append(
-            """
-    , s{i} AS MATERIALIZED (
-      SELECT b.v AS node, CAST(sum(e.x) AS HUGEINT) AS y
-      FROM both_e b JOIN {prev} e ON e.node = b.u
-      GROUP BY b.v
-    ), m{i} AS (SELECT max(y) AS my FROM s{i}
-    ), e{i} AS MATERIALIZED (
-      SELECT s.node, CAST({upd} AS HUGEINT) AS x
-      FROM s{i} s, m{i} m
-    )""".format(
-                i=i,
-                prev=prev,
-                upd=sql_halfup_div(f"{EC_SCALE}::HUGEINT * s.y", "m.my"),
-            )
-        )
-        prev = f"e{i}"
-    parts.append(
-        f"""
-    SELECT node, CAST(x AS BIGINT) AS ec_micro
-    FROM {prev} ORDER BY x DESC, node LIMIT {EC_TOPK}
-    """
-    )
-    return "".join(parts)
-
-
-@register("graph_eigenvector_centrality_power", oracle=_ec_oracle())
-def graph_eigenvector_centrality_power(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Eigenvector centrality of the co-purchase graph — 6 fixed
-    power iterations x' = A x with L-infinity renormalization after
-    each hop, reported for the top-10 nodes. PageRank asks "where
-    does a random surfer end up"; eigenvector centrality asks "who is
-    connected to the well-connected" with no damping/teleport — hubs
-    whose NEIGHBORS are hubs. The broadcast-iterate pattern is
-    ``embedding_cov_top_eigen_power``'s (VERDICT r12 suggestion)
-    applied to the graph adjacency: the renormalizer is a 1-row max
-    aggregate broadcast into the next hop.
-
-    Exactness: scores live in int64/decimal micro-units; each hop is
-    an order-independent integer sum over in-edges followed by ONE
-    half-up division by the 1-row max — the identical integer
-    trajectory in both engines (the PageRank determinism argument,
-    ``graph.py``), so even this iterative operator is hash-verified
-    value-for-value via 6 unrolled MATERIALIZED CTEs.
-
-    Scale shape per hop: one groupBy(dst) over the session-shared edge
-    list (both directions, localCheckpointed once); the score table is
-    node-sized and the renormalizer is a broadcast scalar. Iteration
-    count fixed at 6 (driver loop bounded; lineage kept flat via
-    eager localCheckpoint, the PageRank discipline). Top-k via
-    TakeOrderedAndProject.
-    """
-    from .graph import edge_table
-
-    t = Tables(spark, sf_dir)
-    edges = edge_table(spark, t, sf_dir)
-    both = edges.unionByName(
-        edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).localCheckpoint(eager=True)
-
-    # scores iterate as int64 (x <= 1e6 after each renormalization, so
-    # the hop sum y <= deg_max * 1e6 stays far inside int64 for any
-    # physical degree); only the node-sized renormalizing division
-    # widens to decimal(38,0) for the exact half-up — keeps the hot
-    # edge-sized aggregate on the fast long path (15.7 s all-decimal ->
-    # 9.9 s long-path -> 7.7 s with the gated score broadcast at sf0.1).
-    x = (
-        both.select(F.col("u").alias("node"))
-        .distinct()
-        .select("node", F.lit(EC_SCALE).cast("long").alias("x"))
-        .localCheckpoint(eager=True)
-    )
-    m6 = F.lit(EC_SCALE).cast("decimal(38,0)")
-    from ..functions.partitioning import gated_broadcast
-
-    for _ in range(EC_ITERS):
-        # score table is node-sized: broadcast it under the gate so the
-        # edge list never re-shuffles per hop (map-side join + partial
-        # agg; above the budget the same plan degrades to a shuffle
-        # join — correct, one extra exchange)
-        s = (
-            both.join(gated_broadcast(x.select(F.col("node").alias("u"), "x")), "u")
-            .groupBy(F.col("v").alias("node"))
-            .agg(F.sum("x").alias("y"))
-        )
-        mx = s.agg(F.max("y").alias("my"))
-        x = (
-            s.crossJoin(F.broadcast(mx))
-            .select(
-                "node",
-                halfup_div(m6 * dec38(F.col("y")), dec38(F.col("my")))
-                .cast("long")
-                .alias("x"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    return (
-        x.select("node", F.col("x").alias("ec_micro"))
-        .orderBy(F.col("ec_micro").desc(), "node")
-        .limit(EC_TOPK)
-    )
 
 
 # ---------------------------------------------------------------------------

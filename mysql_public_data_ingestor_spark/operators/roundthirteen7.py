@@ -1,6 +1,5 @@
 """Round-13 direct registrations, batch V (combined rank tests,
-process capability, operating-point selection, attenuated centrality,
-and detrended fluctuation analysis).
+process capability, operating-point selection, and detrended fluctuation analysis).
 
 Five window-slot completions, each oracle-paired, replica-pinned and
 plan-barred in ``tests/test_roundthirteen7.py`` (same-commit gate
@@ -13,8 +12,6 @@ inventory before design (the SCALE §5j.7 authoring rule):
   capability of order->ship latency against fixed spec limits.
 * ``ml_recall_at_precision_floor`` — max recall subject to a
   precision SLA over the exact score grid (3 floors).
-* ``graph_katz_centrality_walks`` — 6-step truncated Katz index
-  (attenuated walk counts) in exact integer micro-units.
 * ``events_dfa_daily`` — detrended fluctuation analysis of the daily
   order series over dyadic box sizes, with the log-log alpha.
 
@@ -491,123 +488,6 @@ def ml_recall_at_precision_floor(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("recall_micro"),
         )
         .orderBy(F.col("floor_num").cast("double") / F.col("floor_den"))
-    )
-
-
-# ---------------------------------------------------------------------------
-# 4. Truncated Katz centrality (6 attenuated hops)
-# ---------------------------------------------------------------------------
-
-KATZ_ITERS = 6
-KATZ_SCALE = 1_000_000
-KATZ_ATT_DEN = 8  # attenuation alpha = 1/8
-KATZ_TOPK = 10
-
-
-def _katz_oracle() -> str:
-    from .graph import _SQL_EDGES
-
-    parts = [
-        _SQL_EDGES,
-        """
-    , both_e AS (
-      SELECT u, v FROM edges UNION ALL SELECT v AS u, u AS v FROM edges
-    ), k0 AS MATERIALIZED (
-      SELECT DISTINCT u AS node, CAST({scale} AS HUGEINT) AS x FROM both_e
-    )""".format(scale=KATZ_SCALE),
-    ]
-    prev = "k0"
-    for i in range(1, KATZ_ITERS + 1):
-        parts.append(
-            """
-    , s{i} AS MATERIALIZED (
-      SELECT b.v AS node, CAST(sum(e.x) AS HUGEINT) AS y
-      FROM both_e b JOIN {prev} e ON e.node = b.u
-      GROUP BY b.v
-    ), k{i} AS MATERIALIZED (
-      SELECT s.node,
-             CAST({scale} + {upd} AS HUGEINT) AS x
-      FROM s{i} s
-    )""".format(
-                i=i,
-                prev=prev,
-                scale=KATZ_SCALE,
-                upd=sql_halfup_div("s.y", str(KATZ_ATT_DEN)),
-            )
-        )
-        prev = f"k{i}"
-    parts.append(
-        f"""
-    SELECT node, CAST(x AS BIGINT) AS katz_micro
-    FROM {prev} ORDER BY x DESC, node LIMIT {KATZ_TOPK}
-    """
-    )
-    return "".join(parts)
-
-
-@register("graph_katz_centrality_walks", oracle=_katz_oracle())
-def graph_katz_centrality_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Truncated Katz index of the co-purchase graph — x =
-    sum_{l=0..6} alpha^l A^l 1 with alpha = 1/8, iterated as x' = 1 +
-    alpha A x (Katz 1953), top-10 nodes. The centrality trio now
-    spans: PageRank (degree-normalized random surfer), eigenvector
-    (dominant-direction, renormalized), and Katz — RAW attenuated walk
-    counts with an additive base, the one that doesn't starve
-    low-degree nodes attached to hubs and stays finite for dangling
-    structures without teleport hacks. Truncation at 6 hops is the
-    documented operator semantics (the exact geometric series needs
-    alpha < 1/lambda_max, which no fixed alpha guarantees on an
-    arbitrary graph; the 6-hop prefix is what the unrolled oracle
-    verifies value-for-value).
-
-    Exactness: scores are integer micro-units; each hop is an
-    order-independent integer sum over in-edges, one exact half-up
-    division by the integer attenuation denominator, plus the base —
-    the identical integer trajectory in both engines (6 unrolled
-    MATERIALIZED CTEs). Headroom: scores grow ~ (avg_deg/8)^6; int64
-    holds to mean co-purchase degree ~1e3 (documented bound; the sums
-    aggregate in decimal(38,0)).
-
-    Scale shape per hop: one groupBy(dst) over the session-shared
-    edge list (the eigenvector-centrality plan without the max
-    broadcast); node-sized score table, eager localCheckpoint per hop.
-    Top-k via TakeOrderedAndProject.
-    """
-    from .graph import edge_table
-
-    t = Tables(spark, sf_dir)
-    edges = edge_table(spark, t, sf_dir)
-    both = edges.unionByName(
-        edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).localCheckpoint(eager=True)
-
-    x = (
-        both.select(F.col("u").alias("node"))
-        .distinct()
-        .select("node", F.lit(KATZ_SCALE).cast("long").alias("x"))
-        .localCheckpoint(eager=True)
-    )
-    att = F.lit(KATZ_ATT_DEN).cast("decimal(38,0)")
-    from ..functions.partitioning import gated_broadcast
-
-    for _ in range(KATZ_ITERS):
-        # node-sized score table broadcast under the gate (the EC hop
-        # plan) — the edge list never re-shuffles per hop
-        s = (
-            both.join(gated_broadcast(x.select(F.col("node").alias("u"), "x")), "u")
-            .groupBy(F.col("v").alias("node"))
-            .agg(F.sum(dec38(F.col("x"))).alias("y"))
-        )
-        x = s.select(
-            "node",
-            (F.lit(KATZ_SCALE) + halfup_div(F.col("y"), att).cast("long")).alias(
-                "x"
-            ),
-        ).localCheckpoint(eager=True)
-    return (
-        x.select("node", F.col("x").alias("katz_micro"))
-        .orderBy(F.col("katz_micro").desc(), "node")
-        .limit(KATZ_TOPK)
     )
 
 

@@ -1,5 +1,5 @@
-"""Round-13 direct registrations, batch W (circular statistics, graph
-robustness, resampled operating points, PQ index quality, seasonal
+"""Round-13 direct registrations, batch W (circular statistics,
+resampled operating points, PQ index quality, seasonal
 diagnostics).
 
 Five window-slot completions, each oracle-paired, replica-pinned and
@@ -9,8 +9,6 @@ inventory before design (the SCALE §5j.7 authoring rule):
 
 * ``stats_circular_weekday_concentration`` — circular resultant
   length / Rayleigh test of the order weekday distribution.
-* ``graph_hub_removal_robustness`` — targeted-attack audit: what
-  survives deleting the top-degree hubs.
 * ``ml_youden_threshold_jackknife`` — delete-one-block jackknife of
   the Youden-optimal operating point (threshold stability).
 * ``embedding_pq_distortion_audit`` — per-subspace quantization
@@ -126,129 +124,6 @@ def stats_circular_weekday_concentration(spark: SparkSession, sf_dir: str) -> Da
         halfup_div(F.lit(1000).cast("decimal(38,0)") * r2, F.col("n") * t12)
         .cast("long")
         .alias("rayleigh_z_milli"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# 2. Hub-removal robustness of the co-purchase graph
-# ---------------------------------------------------------------------------
-
-HUBS_REMOVED = 8
-
-
-def _hub_removal_oracle() -> str:
-    from .graph import _SQL_EDGES
-
-    hd = sql_halfup_div
-    return _SQL_EDGES + f"""
-    , deg AS (
-      SELECT node, CAST(count(*) AS BIGINT) AS degree
-      FROM (SELECT u AS node FROM edges UNION ALL SELECT v FROM edges)
-      GROUP BY node
-    ), hubs AS (
-      SELECT node FROM deg ORDER BY degree DESC, node ASC LIMIT {HUBS_REMOVED}
-    ), surv AS (
-      SELECT e.u, e.v FROM edges e
-      WHERE e.u NOT IN (SELECT node FROM hubs)
-        AND e.v NOT IN (SELECT node FROM hubs)
-    ), sdeg AS (
-      SELECT node, CAST(count(*) AS BIGINT) AS degree
-      FROM (SELECT u AS node FROM surv UNION ALL SELECT v FROM surv)
-      GROUP BY node
-    ), s AS (
-      SELECT (SELECT count(*) FROM deg) AS n_nodes,
-             (SELECT count(*) FROM edges) AS n_edges,
-             (SELECT count(*) FROM hubs) AS n_hubs_removed,
-             (SELECT count(*) FROM surv) AS n_edges_surviving,
-             (SELECT count(*) FROM sdeg) AS n_nodes_surviving,
-             (SELECT coalesce(max(degree), 0) FROM sdeg) AS max_degree_after
-    )
-    SELECT CAST(n_nodes AS BIGINT) AS n_nodes,
-           CAST(n_edges AS BIGINT) AS n_edges,
-           CAST(n_hubs_removed AS BIGINT) AS n_hubs_removed,
-           CAST(n_edges_surviving AS BIGINT) AS n_edges_surviving,
-           CAST(n_nodes_surviving AS BIGINT) AS n_nodes_surviving,
-           CAST(n_nodes - n_hubs_removed - n_nodes_surviving AS BIGINT)
-             AS n_isolated,
-           CAST(max_degree_after AS BIGINT) AS max_degree_after,
-           CAST({hd('1000000::HUGEINT * n_edges_surviving', 'n_edges')}
-                AS BIGINT) AS edges_surviving_ppm
-    FROM s
-    """
-
-
-@register("graph_hub_removal_robustness", oracle=_hub_removal_oracle())
-def graph_hub_removal_robustness(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Targeted-attack robustness audit of the co-purchase graph
-    (Albert, Jeong & Barabási 2000): delete the 8 highest-degree
-    hubs and report what survives — edges, still-connected nodes,
-    freshly isolated nodes, the new maximum degree, and the surviving
-    edge share. Scale-free graphs are famously robust to random
-    failure and fragile to targeted attack; for a recommender this is
-    the "what if the blockbuster SKUs disappear" stress test — a high
-    isolated count means the catalog's connectivity rides on a few
-    hub products.
-
-    Exactness: hub selection is deterministic ((degree desc, node
-    asc) top-8); every output is an exact count plus ONE half-up
-    ppm division.
-
-    Scale shape: degrees off the session-shared edge list; the hub
-    set is 8 rows broadcast into two anti-joins (never a shuffle of
-    the edge list against itself); surviving degrees are one more
-    node-keyed aggregate. 1 row out.
-    """
-    from .graph import _degrees, edge_table
-
-    t = Tables(spark, sf_dir)
-    edges = edge_table(spark, t, sf_dir).localCheckpoint(eager=False)
-    deg = _degrees(edges)
-    hubs = (
-        deg.orderBy(F.col("degree").desc(), "node")
-        .limit(HUBS_REMOVED)
-        .select(F.col("node").alias("hub"))
-    )
-    surv = edges.join(
-        F.broadcast(hubs), F.col("u") == F.col("hub"), "left_anti"
-    ).join(F.broadcast(hubs), F.col("v") == F.col("hub"), "left_anti")
-    sdeg = (
-        surv.select(F.col("u").alias("node"))
-        .unionAll(surv.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("degree"))
-    )
-    a = deg.agg(
-        F.count(F.lit(1)).cast("long").alias("n_nodes")
-    )
-    b = edges.agg(F.count(F.lit(1)).cast("long").alias("n_edges"))
-    c = hubs.agg(F.count(F.lit(1)).cast("long").alias("n_hubs_removed"))
-    d = surv.agg(F.count(F.lit(1)).cast("long").alias("n_edges_surviving"))
-    e = sdeg.agg(
-        F.count(F.lit(1)).cast("long").alias("n_nodes_surviving"),
-        F.coalesce(F.max("degree"), F.lit(0)).cast("long").alias(
-            "max_degree_after"
-        ),
-    )
-    m6 = F.lit(1_000_000).cast("decimal(38,0)")
-    return (
-        a.crossJoin(F.broadcast(b))
-        .crossJoin(F.broadcast(c))
-        .crossJoin(F.broadcast(d))
-        .crossJoin(F.broadcast(e))
-        .select(
-            "n_nodes",
-            "n_edges",
-            "n_hubs_removed",
-            "n_edges_surviving",
-            "n_nodes_surviving",
-            (
-                F.col("n_nodes") - F.col("n_hubs_removed") - F.col("n_nodes_surviving")
-            ).alias("n_isolated"),
-            "max_degree_after",
-            halfup_div(m6 * dec38(F.col("n_edges_surviving")), dec38(F.col("n_edges")))
-            .cast("long")
-            .alias("edges_surviving_ppm"),
-        )
     )
 
 

@@ -6,8 +6,8 @@ records the ×10 ladder.
 
 Batch theme — scale-curve and audit completions: spectral entropy of
 the fixed-period periodogram, the Fano-factor burstiness curve across
-window widths, a punctuation-profile chi-square between sources, a
-2-peel k-truss edge filtration, deterministic permutation importance
+window widths, a punctuation-profile chi-square between sources,
+deterministic permutation importance
 for the classifier score, and a bottom-k sketch mergeability audit.
 """
 
@@ -332,141 +332,6 @@ def text_punct_profile_chi2_by_source(spark: SparkSession, sf_dir: str) -> DataF
         )
         .orderBy("source", "cls")
     )
-
-
-# ---------------------------------------------------------------------------
-# 4. 2-peel k-truss edge filtration (k = 4)
-# ---------------------------------------------------------------------------
-
-TRUSS_K = 4  # edges must sit in >= k-2 = 2 triangles to survive a peel
-
-
-def _ktruss_oracle() -> str:
-    from .graph import _SQL_TRI_CTES
-
-    s = TRUSS_K - 2
-    return (
-        _SQL_TRI_CTES
-        + f"""
-    , trism AS MATERIALIZED (
-      -- materialized: every downstream reference would otherwise
-      -- re-run the wedge-closure join (measured: unbounded DuckDB
-      -- spill at sf0.1 — >70 GB temp before the host ran out)
-      SELECT a, b, c FROM tris
-    ), es0 AS (
-      SELECT least(a, b) AS u, greatest(a, b) AS v FROM trism
-      UNION ALL SELECT least(a, c), greatest(a, c) FROM trism
-      UNION ALL SELECT b, c FROM trism
-    ), sup0 AS (
-      SELECT u, v, CAST(count(*) AS BIGINT) AS support FROM es0 GROUP BY u, v
-    ), keep1 AS MATERIALIZED (
-      SELECT u, v FROM sup0 WHERE support >= {s}
-    ), tri1 AS MATERIALIZED (
-      SELECT t.a, t.b, t.c FROM trism t
-      WHERE EXISTS (SELECT 1 FROM keep1 k WHERE k.u = least(t.a, t.b) AND k.v = greatest(t.a, t.b))
-        AND EXISTS (SELECT 1 FROM keep1 k WHERE k.u = least(t.a, t.c) AND k.v = greatest(t.a, t.c))
-        AND EXISTS (SELECT 1 FROM keep1 k WHERE k.u = t.b AND k.v = t.c)
-    ), es1 AS (
-      SELECT least(a, b) AS u, greatest(a, b) AS v FROM tri1
-      UNION ALL SELECT least(a, c), greatest(a, c) FROM tri1
-      UNION ALL SELECT b, c FROM tri1
-    ), sup1 AS (
-      SELECT u, v, CAST(count(*) AS BIGINT) AS support FROM es1 GROUP BY u, v
-    ), keep2 AS (
-      SELECT u, v FROM sup1 WHERE support >= {s}
-    ), base AS (SELECT CAST(count(*) AS BIGINT) AS n FROM edges),
-    r0 AS (SELECT 0::BIGINT AS peel, n AS n_edges,
-                  (SELECT CAST(count(DISTINCT node) AS BIGINT)
-                   FROM (SELECT u AS node FROM edges UNION SELECT v FROM edges))
-                    AS n_nodes
-           FROM base),
-    r1 AS (SELECT 1::BIGINT, CAST(count(*) AS BIGINT),
-                  (SELECT CAST(count(DISTINCT node) AS BIGINT)
-                   FROM (SELECT u AS node FROM keep1 UNION SELECT v FROM keep1))
-           FROM keep1),
-    r2 AS (SELECT 2::BIGINT, CAST(count(*) AS BIGINT),
-                  (SELECT CAST(count(DISTINCT node) AS BIGINT)
-                   FROM (SELECT u AS node FROM keep2 UNION SELECT v FROM keep2))
-           FROM keep2)
-    SELECT * FROM r0 UNION ALL SELECT * FROM r1 UNION ALL SELECT * FROM r2
-    ORDER BY peel
-    """
-    )
-
-
-@register("graph_ktruss_2peel_edges", _ktruss_oracle())
-def graph_ktruss_2peel_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two peeling rounds toward the {TRUSS_K}-truss of the
-    co-purchase graph: round 1 keeps edges in >= {TRUSS_K}-2 triangles
-    (the support floor), round 2 recounts support INSIDE the surviving
-    subgraph and peels again — the cohesion filtration between
-    triangle support (one static count,
-    ``graph_edge_triangle_support``) and the full fixpoint truss;
-    depth-capped iteration is the house convention for peeling/BFS
-    families (``graph_kcore_membership``'s documented pattern), and
-    the edge-count trajectory (peel 0/1/2) is the signal a community
-    detector needs to pick k.
-
-    Exactness: pure set algebra and integer counts. Scale shape:
-    triangles come from the session-shared warehouse; each peel is a
-    3-way corner unpivot, an edge-keyed aggregate, and semi-joins of
-    the triangle list against surviving edges — all edge/triangle
-    keyed equi-joins.
-    """
-    from .graph import edge_table, triangle_table
-
-    t = Tables(spark, sf_dir)
-    tris = triangle_table(spark, t, sf_dir)
-    edges = edge_table(spark, t, sf_dir)
-    s = TRUSS_K - 2
-
-    def corners(tr):
-        return (
-            tr.select(F.least("a", "b").alias("u"), F.greatest("a", "b").alias("v"))
-            .unionAll(
-                tr.select(F.least("a", "c").alias("u"), F.greatest("a", "c").alias("v"))
-            )
-            .unionAll(tr.select(F.col("b").alias("u"), F.col("c").alias("v")))
-        )
-
-    def nodes_of(e):
-        return (
-            e.select(F.col("u").alias("node"))
-            .union(e.select(F.col("v").alias("node")))
-            .agg(F.countDistinct("node").cast("long").alias("n_nodes"))
-        )
-
-    sup0 = corners(tris).groupBy("u", "v").agg(F.count(F.lit(1)).alias("support"))
-    keep1 = sup0.filter(F.col("support") >= s).select("u", "v")
-    tri1 = (
-        tris.join(
-            keep1.select(F.col("u").alias("e1u"), F.col("v").alias("e1v")),
-            (F.least("a", "b") == F.col("e1u")) & (F.greatest("a", "b") == F.col("e1v")),
-            "left_semi",
-        )
-        .join(
-            keep1.select(F.col("u").alias("e2u"), F.col("v").alias("e2v")),
-            (F.least("a", "c") == F.col("e2u")) & (F.greatest("a", "c") == F.col("e2v")),
-            "left_semi",
-        )
-        .join(
-            keep1.select(F.col("u").alias("e3u"), F.col("v").alias("e3v")),
-            (F.col("b") == F.col("e3u")) & (F.col("c") == F.col("e3v")),
-            "left_semi",
-        )
-    )
-    sup1 = corners(tri1).groupBy("u", "v").agg(F.count(F.lit(1)).alias("support"))
-    keep2 = sup1.filter(F.col("support") >= s).select("u", "v")
-    r0 = edges.agg(F.count(F.lit(1)).cast("long").alias("n_edges")).crossJoin(
-        F.broadcast(nodes_of(edges))
-    ).select(F.lit(0).cast("long").alias("peel"), "n_edges", "n_nodes")
-    r1 = keep1.agg(F.count(F.lit(1)).cast("long").alias("n_edges")).crossJoin(
-        F.broadcast(nodes_of(keep1))
-    ).select(F.lit(1).cast("long").alias("peel"), "n_edges", "n_nodes")
-    r2 = keep2.agg(F.count(F.lit(1)).cast("long").alias("n_edges")).crossJoin(
-        F.broadcast(nodes_of(keep2))
-    ).select(F.lit(2).cast("long").alias("peel"), "n_edges", "n_nodes")
-    return r0.unionByName(r1).unionByName(r2).orderBy("peel")
 
 
 # ---------------------------------------------------------------------------

@@ -5,8 +5,7 @@ float anchors in ``tests/test_roundtwelve2.py``; SCALE.md §5j.8
 records the ×10 ladder.
 
 Batch theme — plan/layout cost audits and ordered-category tests: a
-bipartite-projection inflation audit for the co-purchase graph build,
-a mutual-information audit between language and document-length
+mutual-information audit between language and document-length
 bucket, the Cochran–Armitage trend test for a binary outcome across
 ordered priorities, a min/max data-skipping effectiveness audit over
 month partitions, and the session-count sensitivity curve across gap
@@ -29,107 +28,6 @@ from pyspark.sql import functions as F
 from ..functions.exact import dec38, halfup_div, sql_halfup_div
 from ..registry import register
 from ..tables import Tables
-
-# ---------------------------------------------------------------------------
-# 1. Bipartite-projection inflation audit (order x part -> co-purchase)
-# ---------------------------------------------------------------------------
-
-
-def _bipartite_oracle() -> str:
-    hd = sql_halfup_div
-    return f"""
-    WITH li AS (
-      SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
-    ), odeg AS (
-      SELECT l_orderkey, CAST(count(*) AS HUGEINT) AS d FROM li GROUP BY 1
-    ), pdeg AS (
-      SELECT l_partkey, CAST(count(*) AS HUGEINT) AS d FROM li GROUP BY 1
-    ), edges AS (
-      SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-      FROM li a JOIN li b
-        ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-    ), osum AS (
-      SELECT CAST(count(*) AS BIGINT) AS n_orders,
-             CAST(max(d) AS BIGINT) AS max_order_deg,
-             CAST(sum(d * (d - 1) // 2) AS HUGEINT) AS pair_gen
-      FROM odeg
-    ), psum AS (
-      SELECT CAST(count(*) AS BIGINT) AS n_parts,
-             CAST(max(d) AS BIGINT) AS max_part_deg
-      FROM pdeg
-    ), esum AS (SELECT CAST(count(*) AS HUGEINT) AS n_edges FROM edges)
-    SELECT o.n_orders, p.n_parts, o.max_order_deg, p.max_part_deg,
-           CAST(o.pair_gen AS BIGINT) AS pairs_generated,
-           CAST(e.n_edges AS BIGINT) AS distinct_edges,
-           CASE WHEN e.n_edges > 0 THEN
-             CAST({hd('1000000::HUGEINT * o.pair_gen', 'e.n_edges')} AS BIGINT)
-           END AS inflation_micro
-    FROM osum o, psum p, esum e
-    """
-
-
-@register("graph_bipartite_projection_audit", _bipartite_oracle())
-def graph_bipartite_projection_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cost audit of the order x part bipartite projection that builds
-    the co-purchase graph: both side degree profiles, the pair volume
-    the projection GENERATES (sum over orders of C(d,2) — the shuffle
-    output every downstream graph query pays for once) and the
-    distinct edges that SURVIVE dedup, with the inflation ratio
-    between them. The ratio is the capacity-planning number for the
-    projection stage itself: inflation near 1 means co-purchase pairs
-    are mostly unique (dedup is cheap, the generator dominates); high
-    inflation means a few popular pairs repeat across orders and the
-    pre-aggregation/distinct step is what saves the shuffle. The
-    max order degree bounds the worst single-key blowup (C(d_max, 2)
-    pairs from one order — the skew cell a salting decision reads).
-
-    Exactness: all counts exact integers (d(d-1)/2 is exact — one of
-    d, d-1 is even); the inflation ratio is ONE half-up 1e-6 division.
-
-    Scale shape: two groupBy-count passes over the distinct
-    (order, part) incidence list + the edge count off the session-
-    cached edge table (built once, reused by the whole graph family);
-    never materializes the pair multiset — the generated-pair volume
-    comes from the degree SUM, not from generating pairs.
-    """
-    from .graph import edge_table
-
-    t = Tables(spark, sf_dir)
-    li = t.lineitem.select("l_orderkey", "l_partkey").distinct()
-    odeg = li.groupBy("l_orderkey").agg(dec38(F.count(F.lit(1))).alias("d"))
-    pdeg = li.groupBy("l_partkey").agg(dec38(F.count(F.lit(1))).alias("d"))
-    two = F.lit(2).cast("decimal(38,0)")
-    osum = odeg.agg(
-        F.count(F.lit(1)).cast("long").alias("n_orders"),
-        F.max("d").cast("long").alias("max_order_deg"),
-        F.sum((F.col("d") * (F.col("d") - 1)) / two).cast("decimal(38,0)").alias("pair_gen"),
-    )
-    psum = pdeg.agg(
-        F.count(F.lit(1)).cast("long").alias("n_parts"),
-        F.max("d").cast("long").alias("max_part_deg"),
-    )
-    esum = edge_table(spark, t, sf_dir).agg(
-        dec38(F.count(F.lit(1))).alias("n_edges")
-    )
-    m6 = F.lit(1_000_000).cast("decimal(38,0)")
-    return (
-        osum.crossJoin(F.broadcast(psum))
-        .crossJoin(F.broadcast(esum))
-        .select(
-            "n_orders",
-            "n_parts",
-            "max_order_deg",
-            "max_part_deg",
-            F.col("pair_gen").cast("long").alias("pairs_generated"),
-            F.col("n_edges").cast("long").alias("distinct_edges"),
-            F.when(
-                F.col("n_edges") > 0,
-                halfup_div(m6 * F.col("pair_gen"), F.col("n_edges")),
-            )
-            .cast("long")
-            .alias("inflation_micro"),
-        )
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -4,11 +4,10 @@ Gates: raw-frame oracle parity, plan bars and Python replicas with
 float anchors in ``tests/test_roundtwelve3.py``; SCALE.md §5j.9
 records the ×10 ladder.
 
-Batch theme — post-hoc tests, provenance, graph structure curves and
-DP budget planning: the Dunn nonparametric post-hoc pairwise test
-behind the existing Kruskal–Wallis, a cross-source exact-duplicate
-contamination matrix, the clustering-coefficient-by-degree curve
-(hierarchical structure), and a differential-privacy budget utility
+Batch theme — post-hoc tests, provenance and DP budget planning: the
+Dunn nonparametric post-hoc pairwise test behind the existing
+Kruskal–Wallis, a cross-source exact-duplicate contamination matrix,
+and a differential-privacy budget utility
 curve across epsilon levels. Every name was checked against the full
 registry inventory before design (the §5j.7 authoring rule).
 
@@ -316,115 +315,6 @@ def dedup_cross_source_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("jaccard_micro"),
     ).orderBy("s_i", "s_j")
-
-
-# ---------------------------------------------------------------------------
-# 3. Clustering-coefficient-by-degree curve (hierarchical structure)
-# ---------------------------------------------------------------------------
-
-
-def _ck_oracle() -> str:
-    from .graph import _SQL_TRI_CTES
-
-    hd = sql_halfup_div
-    return (
-        _SQL_TRI_CTES
-        + f"""
-    , node_tri AS (
-      SELECT node, CAST(count(*) AS BIGINT) AS n_tri
-      FROM (SELECT a AS node FROM tris UNION ALL
-            SELECT b FROM tris UNION ALL SELECT c FROM tris)
-      GROUP BY node
-    ), cc AS (
-      SELECT d.node, d.degree,
-             -- floor(log2(d)) via binary length: exact integer, never a
-             -- float log at a power-of-2 boundary (cross-engine ulp trap)
-             CAST(length(bin(d.degree)) - 1 AS BIGINT) AS db,
-             {hd('2000000::HUGEINT * coalesce(nt.n_tri, 0)',
-                 'd.degree::HUGEINT * (d.degree - 1)')} AS c_micro
-      FROM deg d LEFT JOIN node_tri nt ON nt.node = d.node
-      WHERE d.degree >= 2
-    )
-    SELECT db AS degree_bucket,
-           CAST(min(degree) AS BIGINT) AS min_degree,
-           CAST(max(degree) AS BIGINT) AS max_degree,
-           CAST(count(*) AS BIGINT) AS n_nodes,
-           CAST({hd('CAST(sum(c_micro) AS HUGEINT)', 'CAST(count(*) AS HUGEINT)')}
-                AS BIGINT) AS mean_clustering_micro
-    FROM cc GROUP BY db ORDER BY db
-    """
-    )
-
-
-@register("graph_clustering_by_degree_curve", _ck_oracle())
-def graph_clustering_by_degree_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mean local clustering coefficient per log2 degree bucket, C(k)
-    — the hierarchical-structure curve: a falling C(k) (clustering
-    concentrated in low-degree nodes) is the signature of hierarchical
-    / modular networks, a flat one of degree-independent mixing.
-    ``graph_local_clustering_topk`` ranks individual nodes and
-    ``graph_transitivity_global`` ships one number; this is the curve
-    between them, and the structural input to sampling decisions (can
-    hub neighborhoods be subsampled without losing triangle mass?).
-
-    Exactness: per-node c_v = 2 T_v / (d_v (d_v - 1)) quantizes ONCE
-    at 1e-6 (exact integer ratio off the shared triangle warehouse);
-    the bucket mean is one further half-up division of exact sums (the
-    per-node-quantize-then-average convention of the recall audits).
-
-    Scale shape: node triangle counts are a 3-way unpivot of the
-    session-cached triangle table (each triangle found once at its
-    low-degree apex — never a neighborhood self-join); degrees off the
-    cached edge table; everything after is bounded (log2-bucket)
-    algebra.
-    """
-    from .graph import edge_table, triangle_table
-
-    t = Tables(spark, sf_dir)
-    edges = edge_table(spark, t, sf_dir)
-    deg = (
-        edges.select(F.col("u").alias("node"))
-        .unionAll(edges.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("degree"))
-    )
-    tris = triangle_table(spark, t, sf_dir)
-    node_tri = (
-        tris.select(F.col("a").alias("node"))
-        .unionAll(tris.select(F.col("b").alias("node")))
-        .unionAll(tris.select(F.col("c").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("n_tri"))
-    )
-    m2 = F.lit(2_000_000).cast("decimal(38,0)")
-    cc = (
-        deg.filter(F.col("degree") >= 2)
-        .join(node_tri, "node", "left")
-        .select(
-            # floor(log2(d)) as binary-string length: exact on both
-            # engines (float log2 flips at power-of-2 boundaries)
-            (F.length(F.conv(F.col("degree").cast("string"), 10, 2)) - 1)
-            .cast("long")
-            .alias("db"),
-            "degree",
-            halfup_div(
-                m2 * dec38(F.coalesce(F.col("n_tri"), F.lit(0))),
-                dec38(F.col("degree")) * (F.col("degree") - 1),
-            ).alias("c_micro"),
-        )
-    )
-    return (
-        cc.groupBy(F.col("db").alias("degree_bucket"))
-        .agg(
-            F.min("degree").cast("long").alias("min_degree"),
-            F.max("degree").cast("long").alias("max_degree"),
-            F.count(F.lit(1)).cast("long").alias("n_nodes"),
-            halfup_div(F.sum("c_micro"), dec38(F.count(F.lit(1))))
-            .cast("long")
-            .alias("mean_clustering_micro"),
-        )
-        .orderBy("degree_bucket")
-    )
 
 
 # ---------------------------------------------------------------------------

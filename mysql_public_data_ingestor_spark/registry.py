@@ -78,7 +78,11 @@ def _ensure_loaded() -> None:
         bucketed,
         corpus,
         dedup,
-        graph,
+        graph_centrality,
+        graph_community,
+        graph_linkpred,
+        graph_paths,
+        graph_structure,
         layout,
         ml,
         multimodal,

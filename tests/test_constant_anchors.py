@@ -17,12 +17,12 @@ def _halfup_int(num: int, den: int) -> int:
 
 
 def test_harmonic_closeness_reciprocals():
-    """roundnine.HARM_R1/R2/R3 are half-up 1e12-scaled 1/1, 1/2, 1/3."""
-    from mysql_public_data_ingestor_spark.operators import roundnine
+    """graph_paths.HARM_R1/R2/R3 are half-up 1e12-scaled 1/1, 1/2, 1/3."""
+    from mysql_public_data_ingestor_spark.operators import graph_paths
 
-    assert roundnine.HARM_R1 == _halfup_int(10**12, 1)
-    assert roundnine.HARM_R2 == _halfup_int(10**12, 2)
-    assert roundnine.HARM_R3 == _halfup_int(10**12, 3)
+    assert graph_paths.HARM_R1 == _halfup_int(10**12, 1)
+    assert graph_paths.HARM_R2 == _halfup_int(10**12, 2)
+    assert graph_paths.HARM_R3 == _halfup_int(10**12, 3)
 
 
 def test_gumbel_constants():

@@ -9,7 +9,7 @@ import math
 
 from pyspark.sql import functions as F
 
-from mysql_public_data_ingestor_spark.operators import corpus, graph, stats, text
+from mysql_public_data_ingestor_spark.operators import corpus, graph_linkpred, stats, text
 from mysql_public_data_ingestor_spark.operators.timeseries import (
     events_user_path_transitions,
 )
@@ -81,8 +81,8 @@ def test_market_basket_lift_identities(spark, sf_dir):
     )
     n_orders = li.select("l_orderkey").distinct().count()
     item = {r.l_partkey: r.c for r in li.groupBy("l_partkey").agg(F.count(F.lit(1)).alias("c")).collect()}
-    for r in graph.graph_market_basket_lift(spark, sf_dir).collect():
-        assert r.c_uv >= graph.MIN_PAIR_ORDERS
+    for r in graph_linkpred.graph_market_basket_lift(spark, sf_dir).collect():
+        assert r.c_uv >= graph_linkpred.MIN_PAIR_ORDERS
         assert math.isclose(r.support, round(r.c_uv / n_orders, 6), abs_tol=1e-9)
         assert math.isclose(
             r.confidence_u_v, round(r.c_uv / item[r.u], 6), abs_tol=1e-9

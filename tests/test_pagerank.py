@@ -7,7 +7,7 @@ from __future__ import annotations
 
 import duckdb
 
-from mysql_public_data_ingestor_spark.operators.graph import (
+from mysql_public_data_ingestor_spark.operators.graph_centrality import (
     PR_DAMP_DEN,
     PR_DAMP_NUM,
     PR_ITERS,

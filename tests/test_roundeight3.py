@@ -59,7 +59,7 @@ def orders_pdf(spark, sf_dir):
 
 
 def test_jaccard_linkpred_matches_python(spark, sf_dir, lineitem_pdf):
-    from mysql_public_data_ingestor_spark.operators.roundeight3 import (
+    from mysql_public_data_ingestor_spark.operators.graph_linkpred import (
         JC_MIN_CN,
         JC_SEEDS,
         JC_TOPK,

@@ -11,6 +11,7 @@ from collections import defaultdict
 
 import pytest
 
+from mysql_public_data_ingestor_spark.operators import graph_paths
 from mysql_public_data_ingestor_spark.operators import roundeleven2 as r112
 from mysql_public_data_ingestor_spark.tables import Tables
 from tools.check_correctness import compare, duck_connection
@@ -103,7 +104,7 @@ def test_betweenness_matches_python(spark, sf_dir):
     adj = _adjacency(spark, sf_dir)
     M = 1_000_000
     exp_rows = {}
-    for seed in sorted(n for n in adj if n < r112.BTW_SEED_MAX):
+    for seed in sorted(n for n in adj if n < graph_paths.BTW_SEED_MAX):
         d1 = set(adj[seed])
         sigma2: dict = defaultdict(int)
         for v in d1:

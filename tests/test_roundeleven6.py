@@ -10,7 +10,7 @@ from collections import Counter, defaultdict
 
 import pytest
 
-from mysql_public_data_ingestor_spark.operators import roundeleven6 as r116
+from mysql_public_data_ingestor_spark.operators import graph_paths
 from mysql_public_data_ingestor_spark.tables import Tables
 from tools.check_correctness import compare, duck_connection
 
@@ -137,7 +137,7 @@ def test_eccentricity_matches_python(spark, sf_dir):
         seen = {seed}
         frontier = {seed}
         sizes = []
-        for _ in range(r116.ECC_DEPTH):
+        for _ in range(graph_paths.ECC_DEPTH):
             nxt = set()
             for u in frontier:
                 nxt |= adj[u]

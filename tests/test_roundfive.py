@@ -11,21 +11,49 @@ from mysql_public_data_ingestor_spark.operators import roundfive
 from mysql_public_data_ingestor_spark.registry import all_queries
 from tools.check_correctness import canon, compare, duck_connection
 
-# (name, fn, oracle, doc) of every query the module registers
+# The queries this gate covers, by name, so its test ids stay fixed: the
+# module's own queries plus the graph queries it registered before the
+# graph family moved to ``operators/graph_*.py``.
+NAMES = (
+    "agg_topk_mergeable",
+    "corpus_dedup_survivorship",
+    "corpus_temperature_mixture",
+    "dq_schema_drift",
+    "dq_uniqueness_violations",
+    "embedding_pq_assign_stats",
+    "events_funnel_time_windowed",
+    "events_hourly_topk_users",
+    "events_late_arrival_audit",
+    "events_scd_asof_snapshot",
+    "graph_label_propagation",
+    "join_range_bucketed",
+    "layout_compaction_plan",
+    "lineitem_shipment_latency",
+    "ml_confusion_threshold_sweep",
+    "privacy_l_diversity_audit",
+    "similarity_ann_multiprobe_topk",
+    "stats_logistic_gd",
+    "stats_pareto_by_nation",
+    "stats_welch_anova",
+    "text_char_trigram_profile",
+    "text_langid_confusion",
+    "text_pmi_cooccurrence",
+)
+# (name, fn, oracle, doc) of each
 QUERIES = [
-    (s.name, s.fn, s.oracle, s.doc)
-    for s in all_queries().values()
-    if s.fn.__module__ == roundfive.__name__
+    (s.name, s.fn, s.oracle, s.doc) for s in (all_queries()[n] for n in NAMES)
 ]
 
 
 def test_queue_is_registered_with_oracles():
-    """All 23 roundfive.py queries reach ``__spark_entry__.oracle_sql()``, each with
+    """All 22 roundfive.py queries reach ``__spark_entry__.oracle_sql()``, each with
     its oracle."""
     import __spark_entry__ as entry
 
-    names = {name for name, *_ in QUERIES}
-    assert len(names) == 23
+    names = {
+        s.name for s in all_queries().values() if s.fn.__module__ == roundfive.__name__
+    }
+    assert len(names) == 22
     missing = names - set(entry.oracle_sql())
     assert not missing, f"registered without oracle: {missing}"
 
@@ -139,4 +167,6 @@ def test_activate_registers_cleanly_in_subprocess():
     )
     assert out.returncode == 0, out.stderr[-2000:]
     registered = json.loads(out.stdout.strip().splitlines()[-1])
-    assert registered == sorted(name for name, *_ in QUERIES)
+    assert registered == sorted(
+        s.name for s in all_queries().values() if s.fn.__module__ == roundfive.__name__
+    )

@@ -15,6 +15,7 @@ from itertools import combinations
 
 import pytest
 
+from mysql_public_data_ingestor_spark.operators import graph_centrality
 from mysql_public_data_ingestor_spark.operators import roundfourteen4 as r144
 from mysql_public_data_ingestor_spark.tables import Tables
 from tools.check_correctness import compare, duck_connection
@@ -95,11 +96,10 @@ def test_pagerank_weighted_matches_python(spark, sf_dir):
         strength[v] += c
     nodes = sorted(strength)
     n = len(nodes)
-    base = (r144.PRW_DAMP_DEN - r144.PRW_DAMP_NUM) * r144.PRW_SCALE // (
-        r144.PRW_DAMP_DEN * n
-    )
-    rank = {u: r144.PRW_SCALE // n for u in nodes}
-    for _ in range(r144.PRW_ITERS):
+    num, den = graph_centrality.PRW_DAMP_NUM, graph_centrality.PRW_DAMP_DEN
+    base = (den - num) * graph_centrality.PRW_SCALE // (den * n)
+    rank = {u: graph_centrality.PRW_SCALE // n for u in nodes}
+    for _ in range(graph_centrality.PRW_ITERS):
         in_sum = Counter()
         for u in nodes:
             ru = rank[u]
@@ -107,14 +107,14 @@ def test_pagerank_weighted_matches_python(spark, sf_dir):
             for v, c in out_w[u]:
                 in_sum[v] += int(ru * c / su)  # exact: ru*c < 2^53
         rank = {
-            u: base + int(in_sum[u] * r144.PRW_DAMP_NUM / r144.PRW_DAMP_DEN)
+            u: base + int(in_sum[u] * num / den)
             for u in nodes
         }
-    top = sorted(rank.items(), key=lambda kv: (-kv[1], kv[0]))[: r144.PRW_TOPK]
+    top = sorted(rank.items(), key=lambda kv: (-kv[1], kv[0]))[: graph_centrality.PRW_TOPK]
     got = _spec("graph_pagerank_weighted").fn(spark, sf_dir).toPandas()
     assert [(int(r.node), int(r.rank_micro)) for r in got.itertuples()] == top
     # float anchor: total rank mass stays within truncation loss of 1.0
-    assert 0.5 <= sum(rank.values()) / r144.PRW_SCALE <= 1.0 + 1e-9
+    assert 0.5 <= sum(rank.values()) / graph_centrality.PRW_SCALE <= 1.0 + 1e-9
 
 
 def _adj(spark, sf_dir):

@@ -16,6 +16,7 @@ import numpy as np
 import pandas as pd
 import pytest
 
+from mysql_public_data_ingestor_spark.operators import graph_paths
 from mysql_public_data_ingestor_spark.operators import roundnine2 as r92
 from mysql_public_data_ingestor_spark.functions.detmath import ref_det_ln_q
 from mysql_public_data_ingestor_spark.tables import Tables
@@ -129,11 +130,11 @@ def test_weighted_sssp_matches_python(spark, sf_dir, lineitem_pdf):
         w = 1000000 // (c + 1)
         wadj.setdefault(u, []).append((v, w))
         wadj.setdefault(v, []).append((u, w))
-    seeds = sorted(u for u in wadj if u < r92.SSSP_SEED_MAX)
+    seeds = sorted(u for u in wadj if u < graph_paths.SSSP_SEED_MAX)
     expect = {}
     for s in seeds:
         dist = {s: 0}
-        for _ in range(r92.SSSP_ROUNDS):
+        for _ in range(graph_paths.SSSP_ROUNDS):
             nxt = dict(dist)
             for node, d in dist.items():
                 for v, w in wadj.get(node, []):
@@ -143,7 +144,7 @@ def test_weighted_sssp_matches_python(spark, sf_dir, lineitem_pdf):
             dist = nxt
         ranked = sorted(
             ((d, n) for n, d in dist.items() if n != s), key=lambda x: (x[0], x[1])
-        )[: r92.SSSP_TOPK]
+        )[: graph_paths.SSSP_TOPK]
         for rnk, (d, n) in enumerate(ranked, 1):
             expect[(s, n)] = (d, rnk)
     assert len(got) == len(expect)

@@ -14,6 +14,11 @@ import numpy as np
 import pandas as pd
 import pytest
 
+from mysql_public_data_ingestor_spark.operators import (
+    graph_centrality,
+    graph_paths,
+    graph_structure,
+)
 from mysql_public_data_ingestor_spark.operators import roundnine
 from mysql_public_data_ingestor_spark.registry import all_queries
 from mysql_public_data_ingestor_spark.tables import Tables
@@ -179,12 +184,14 @@ def test_katz_matches_python(spark, sf_dir, copurchase):
     got = _q("graph_katz_centrality_seeds", spark, sf_dir).set_index("seed_part")
     deg = {n: len(v) for n, v in nbrs.items()}
     s2 = {n: sum(deg[b] for b in nbrs[n]) for n in nbrs}
-    for seed in sorted(n for n in nbrs if n < roundnine.KATZ_SEED_MAX):
+    for seed in sorted(n for n in nbrs if n < graph_centrality.KATZ_SEED_MAX):
         w1 = deg[seed]
         w2 = s2[seed]
         w3 = sum(s2[a] for a in nbrs[seed])
         katz = (
-            w1 * roundnine.KATZ_W1 + w2 * roundnine.KATZ_W2 + w3 * roundnine.KATZ_W3
+            w1 * graph_centrality.KATZ_W1
+            + w2 * graph_centrality.KATZ_W2
+            + w3 * graph_centrality.KATZ_W3
         ) / 1e9
         row = got.loc[seed]
         assert int(row["walks_1"]) == w1
@@ -196,7 +203,7 @@ def test_katz_matches_python(spark, sf_dir, copurchase):
 def test_harmonic_matches_python(spark, sf_dir, copurchase):
     edges, nbrs = copurchase
     got = _q("graph_harmonic_closeness_seeds", spark, sf_dir).set_index("seed_part")
-    for seed in sorted(n for n in nbrs if n < roundnine.HARM_SEED_MAX):
+    for seed in sorted(n for n in nbrs if n < graph_paths.HARM_SEED_MAX):
         d1 = set(nbrs[seed])
         d2 = set()
         for a in d1:
@@ -207,9 +214,9 @@ def test_harmonic_matches_python(spark, sf_dir, copurchase):
             d3 |= nbrs[a]
         d3 -= d1 | d2 | {seed}
         h = (
-            len(d1) * roundnine.HARM_R1
-            + len(d2) * roundnine.HARM_R2
-            + len(d3) * roundnine.HARM_R3
+            len(d1) * graph_paths.HARM_R1
+            + len(d2) * graph_paths.HARM_R2
+            + len(d3) * graph_paths.HARM_R3
         ) / 1e12
         row = got.loc[seed]
         assert int(row["n_dist1"]) == len(d1)
@@ -345,7 +352,7 @@ def test_rich_club_matches_python(spark, sf_dir, copurchase):
     edges, nbrs = copurchase
     got = _q("graph_rich_club_coefficient", spark, sf_dir).set_index("k")
     deg = {n: len(v) for n, v in nbrs.items()}
-    for k in roundnine.RICH_CLUB_KS:
+    for k in graph_structure.RICH_CLUB_KS:
         rich = {n for n, d in deg.items() if d > k}
         n_k = len(rich)
         e_k = sum(1 for u, v in edges if u in rich and v in rich)

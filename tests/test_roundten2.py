@@ -10,6 +10,7 @@ import math
 
 import pytest
 
+from mysql_public_data_ingestor_spark.operators import graph_paths
 from mysql_public_data_ingestor_spark.operators import roundten2
 from mysql_public_data_ingestor_spark.tables import Tables
 from tools.check_correctness import compare, duck_connection
@@ -455,7 +456,7 @@ def test_stress_centrality_matches_python(spark, sf_dir):
             for b in ps[i + 1 :]:
                 adj[a].add(b)
                 adj[b].add(a)
-    seeds = sorted(n for n in adj if n < roundten2.STRESS_SEED_MAX)
+    seeds = sorted(n for n in adj if n < graph_paths.STRESS_SEED_MAX)
     exp = {}
     for s in seeds:
         d1 = adj[s]

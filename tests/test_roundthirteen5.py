@@ -13,7 +13,7 @@ from itertools import combinations
 
 import pytest
 
-from mysql_public_data_ingestor_spark.operators import roundthirteen5 as r135
+from mysql_public_data_ingestor_spark.operators import graph_centrality, graph_structure
 from mysql_public_data_ingestor_spark.tables import Tables
 from tools.check_correctness import compare, duck_connection
 
@@ -105,7 +105,7 @@ def test_barrat_matches_python(spark, sf_dir):
     hubs = sorted(
         (n for n in adj if len(adj[n]) >= 2),
         key=lambda n: (-strength[n], n),
-    )[: r135.BARRAT_TOPK]
+    )[: graph_structure.BARRAT_TOPK]
     got = _spec("graph_weighted_clustering_barrat").fn(spark, sf_dir).toPandas()
     assert list(got["node"]) == hubs
     for _, row in got.iterrows():
@@ -132,17 +132,17 @@ def test_eigenvector_centrality_matches_python(spark, sf_dir):
     for u, v in w:
         adj[u].add(v)
         adj[v].add(u)
-    x = {n: r135.EC_SCALE for n in adj}
-    for _ in range(r135.EC_ITERS):
+    x = {n: graph_centrality.EC_SCALE for n in adj}
+    for _ in range(graph_centrality.EC_ITERS):
         y = {n: sum(x[m] for m in adj[n]) for n in adj}
         my = max(y.values())
-        x = {n: _halfup_int(r135.EC_SCALE * y[n], my) for n in adj}
-    want = sorted(x.items(), key=lambda kv: (-kv[1], kv[0]))[: r135.EC_TOPK]
+        x = {n: _halfup_int(graph_centrality.EC_SCALE * y[n], my) for n in adj}
+    want = sorted(x.items(), key=lambda kv: (-kv[1], kv[0]))[: graph_centrality.EC_TOPK]
     got = _spec("graph_eigenvector_centrality_power").fn(spark, sf_dir).toPandas()
     assert [(int(r["node"]), int(r["ec_micro"])) for _, r in got.iterrows()] == want
     # float anchor: the same 6 renormalized hops in float arithmetic
     xf = {n: 1.0 for n in adj}
-    for _ in range(r135.EC_ITERS):
+    for _ in range(graph_centrality.EC_ITERS):
         yf = {n: sum(xf[m] for m in adj[n]) for n in adj}
         mf = max(yf.values())
         xf = {n: yf[n] / mf for n in adj}

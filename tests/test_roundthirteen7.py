@@ -13,6 +13,7 @@ from itertools import combinations
 
 import pytest
 
+from mysql_public_data_ingestor_spark.operators import graph_centrality
 from mysql_public_data_ingestor_spark.operators import roundthirteen7 as r137
 from mysql_public_data_ingestor_spark.tables import Tables
 from tools.check_correctness import compare, duck_connection
@@ -262,24 +263,26 @@ def _adj(spark, sf_dir):
 
 def test_katz_matches_python(spark, sf_dir):
     adj = _adj(spark, sf_dir)
-    x = {n: r137.KATZ_SCALE for n in adj}
-    for _ in range(r137.KATZ_ITERS):
+    x = {n: graph_centrality.KATZ_SCALE for n in adj}
+    for _ in range(graph_centrality.KATZ_ITERS):
         y = {n: sum(x[m] for m in adj[n]) for n in adj}
         x = {
-            n: r137.KATZ_SCALE + _halfup_int(y[n], r137.KATZ_ATT_DEN) for n in adj
+            n: graph_centrality.KATZ_SCALE
+            + _halfup_int(y[n], graph_centrality.KATZ_ATT_DEN)
+            for n in adj
         }
-    want = sorted(x.items(), key=lambda kv: (-kv[1], kv[0]))[: r137.KATZ_TOPK]
+    want = sorted(x.items(), key=lambda kv: (-kv[1], kv[0]))[: graph_centrality.KATZ_TOPK]
     got = _spec("graph_katz_centrality_walks").fn(spark, sf_dir).toPandas()
     assert [(int(r["node"]), int(r["katz_micro"])) for _, r in got.iterrows()] == want
     # float anchor: the same truncated series in float arithmetic
     xf = {n: 1.0 for n in adj}
-    for _ in range(r137.KATZ_ITERS):
+    for _ in range(graph_centrality.KATZ_ITERS):
         yf = {n: sum(xf[m] for m in adj[n]) for n in adj}
-        xf = {n: 1.0 + yf[n] / r137.KATZ_ATT_DEN for n in adj}
+        xf = {n: 1.0 + yf[n] / graph_centrality.KATZ_ATT_DEN for n in adj}
     for n, micro in want:
         assert abs(micro / 1e6 - xf[n]) < 1e-3 * max(1.0, xf[n])
         # Katz >= base for every node
-        assert micro >= r137.KATZ_SCALE
+        assert micro >= graph_centrality.KATZ_SCALE
 
 
 def test_dfa_matches_python(spark, sf_dir):

@@ -13,6 +13,7 @@ from itertools import combinations
 
 import pytest
 
+from mysql_public_data_ingestor_spark.operators import graph_centrality
 from mysql_public_data_ingestor_spark.operators import roundthirteen8 as r138
 from mysql_public_data_ingestor_spark.tables import Tables
 from tools.check_correctness import compare, duck_connection
@@ -127,7 +128,7 @@ def test_hub_removal_matches_python(spark, sf_dir):
         deg[v] += 1
     hubs = set(
         n for n, _ in sorted(deg.items(), key=lambda kv: (-kv[1], kv[0]))[
-            : r138.HUBS_REMOVED
+            : graph_centrality.HUBS_REMOVED
         ]
     )
     surv = [(u, v) for u, v in edges if u not in hubs and v not in hubs]

@@ -18,11 +18,19 @@ from mysql_public_data_ingestor_spark.registry import all_queries
 from mysql_public_data_ingestor_spark.tables import Tables
 from tools.check_correctness import compare, duck_connection
 
-# (name, fn, oracle, doc) of every query the module registers
+# The queries this gate covers, by name, so its test ids stay fixed: the
+# module's own queries plus the graph queries it registered before the
+# graph family moved to ``operators/graph_*.py``.
+NAMES = (
+    "corpus_mi_lang_length",
+    "events_session_gap_sensitivity",
+    "graph_bipartite_projection_audit",
+    "layout_minmax_skipping_audit",
+    "stats_cochran_armitage_trend",
+)
+# (name, fn, oracle, doc) of each
 QUERIES = [
-    (s.name, s.fn, s.oracle, s.doc)
-    for s in all_queries().values()
-    if s.fn.__module__ == r122.__name__
+    (s.name, s.fn, s.oracle, s.doc) for s in (all_queries()[n] for n in NAMES)
 ]
 
 

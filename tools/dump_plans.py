@@ -1,7 +1,15 @@
-"""Dump formatted physical plans of the headline queries to PLANS.md —
-reviewable evidence of pushdown, pruning, and join strategy.
+"""Dump formatted physical plans — reviewable evidence of pushdown,
+pruning, and join strategy.
 
-Usage: python tools/dump_plans.py [sf_dir]
+Usage:
+  python tools/dump_plans.py [sf_dir]
+      the headline queries (PLAN_QUERIES) into PLANS.md at the repo root
+      (not committed; ``make plans`` regenerates it);
+  python tools/dump_plans.py <suffix> <out_dir> [query ...]
+      one ``<out_dir>/<query>_<suffix>.txt`` per named query, against
+      SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) — run it with
+      ``before`` on the parent checkout and ``after`` on the change to
+      pair an optimization's plans (``plans/r15/``).
 """
 
 from __future__ import annotations
@@ -189,8 +197,19 @@ PLAN_QUERIES = [
 ]
 
 
-def main() -> None:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
+def dump_pairs(suffix: str, out_dir: str, names: list[str]) -> None:
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    os.makedirs(out_dir, exist_ok=True)
+    spark = get_spark("dump_plans")
+    specs = all_queries()
+    for name in names:
+        df = specs[name].fn(spark, sf_dir)
+        with open(os.path.join(out_dir, f"{name}_{suffix}.txt"), "w") as f:
+            f.write(formatted_plan(df))
+        print(f"wrote {name}_{suffix}.txt")
+
+
+def dump_headline(sf_dir: str) -> None:
     spark = get_spark("dump_plans")
     specs = all_queries()
     out = [
@@ -213,6 +232,14 @@ def main() -> None:
     with open(os.path.join(root, "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print("PLANS.md written")
+
+
+def main() -> None:
+    args = sys.argv[1:]
+    if len(args) >= 2:
+        dump_pairs(args[0], args[1], args[2:])
+    else:
+        dump_headline(args[0] if args else "/root/testdata/sf0.1")
 
 
 if __name__ == "__main__":

@@ -74,7 +74,23 @@ ROUND8 = [
     "stats_ljung_box_daily", "text_simpson_diversity_by_lang",
 ]
 
-PRESETS = {"round6": ROUND6, "round8": ROUND8, "round9queue": None}
+# the 22 queries round 9's batch registered (three of them now live in
+# the graph modules)
+ROUND9 = [
+    "agg_top_value_share", "dq_interval_union_coverage",
+    "events_dau_mau_stickiness", "events_retention_decay_fit",
+    "graph_harmonic_closeness_seeds", "graph_katz_centrality_seeds",
+    "graph_rich_club_coefficient", "layout_serpentine_shard_balance",
+    "ml_auc_jackknife_ci", "ml_brier_decomposition",
+    "ml_expected_calibration_error", "ml_youden_optimal_threshold",
+    "privacy_generalization_ladder", "relational_skyline_pareto",
+    "similarity_lsh_recall_audit", "sketch_kmv_intersection_users",
+    "stats_ansari_bradley_quantity", "stats_cvm_two_sample",
+    "stats_page_hinkley_orders", "stats_two_way_anova_price",
+    "text_sentence_length_profile", "text_term_burstiness_topk",
+]
+
+PRESETS = {"round6": ROUND6, "round8": ROUND8, "round9queue": ROUND9}
 
 
 def main() -> int:
@@ -82,11 +98,7 @@ def main() -> int:
     specs = all_queries()
     names: list[str] = []
     for a in sys.argv[2:]:
-        if a == "@round9queue":
-            names.extend(
-                n for n, s in specs.items() if s.fn.__module__.endswith(".roundnine")
-            )
-        elif a.startswith("@"):
+        if a.startswith("@"):
             names.extend(PRESETS[a[1:]])
         else:
             names.append(a)
