@@ -42,11 +42,14 @@ def tune(spark: SparkSession) -> SparkSession:
     # Spark 4's byte cap (spark.sql.execution.arrow.maxBytesPerBatch,
     # default 64 MB) bound memory for wide/binary rows — batches are
     # min(records, bytes), so this is scale-safe for any row width.
-    # CAVEAT (ADVICE r14, per Spark's conf doc): maxBytesPerBatch does
-    # NOT apply to createDataFrame/toPandas — a future driver-side
-    # Arrow collect would batch up to 1M rows unbounded by bytes.
-    # Current createDataFrame uses are tiny literals and query paths
-    # never collect; keep it that way or lower the record cap locally.
+    # CAVEAT (per Spark's conf doc): maxBytesPerBatch does NOT apply to
+    # createDataFrame/toPandas. Ingest (streaming.ingest.IngestEngine)
+    # hands createDataFrame one poll-sized Arrow table, so with this cap
+    # each poll is one Arrow batch (and one partition) whatever its size
+    # in bytes: a 10^4-row OpenSky poll is about 1.3 MB. Query paths never
+    # collect through Arrow; a future driver-side Arrow collect would
+    # batch up to 1M rows unbounded by bytes, so lower the record cap
+    # locally there.
     conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "1000000")
     # The events fixture stores TIMESTAMP(NANOS) which Spark's parquet
     # reader rejects by default; read as raw nanos (long) and convert in

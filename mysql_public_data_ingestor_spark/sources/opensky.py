@@ -27,9 +27,11 @@ import json
 import urllib.request
 from typing import Callable, Iterator, Optional
 
+import pyarrow as pa
 from pyspark.sql import types as T
 
 from ..schema import FLIGHTS_SCHEMA
+from .batch import rows_to_table, table_rows
 from .registry import register_plugin
 
 OPENSKY_URL = "https://opensky-network.org/api/states/all"
@@ -48,40 +50,10 @@ def _default_http_get(url: str, auth: Optional[tuple[str, str]]) -> bytes:
         return resp.read()
 
 
-def _coerce(value, dt: T.DataType):
-    """Cast one JSON-decoded cell to the declared Spark type.
-
-    JSON numbers arrive as Python int/float interchangeably (the
-    float-widening documented in opensky_plugin_test.go:104-115);
-    sensors (JSON column) is re-serialized to its raw JSON string.
-    """
-    if value is None:
-        return None
-    if isinstance(dt, T.LongType):
-        return int(value)
-    if isinstance(dt, T.IntegerType):
-        return int(value)
-    if isinstance(dt, T.DoubleType):
-        return float(value)
-    if isinstance(dt, T.BooleanType):
-        return bool(value)
-    if isinstance(dt, T.StringType):
-        if isinstance(value, (list, dict)):
-            return json.dumps(value)
-        return str(value)
-    return value
-
-
-def parse_states_payload(payload: bytes, schema: T.StructType = FLIGHTS_SCHEMA) -> list[tuple]:
-    """``{"time": t, "states": [...]}`` -> list of ordered, typed rows."""
-    data = json.loads(payload)
-    states = data.get("states") or []
-    rows = []
-    for state in states:
-        vec = list(state[: len(schema.fields)])
-        vec += [None] * (len(schema.fields) - len(vec))
-        rows.append(tuple(_coerce(v, f.dataType) for v, f in zip(vec, schema.fields)))
-    return rows
+def parse_states_payload(payload: bytes, schema: T.StructType = FLIGHTS_SCHEMA) -> pa.Table:
+    """``{"time": t, "states": [...]}`` -> one table of ordered, typed rows
+    (zero rows when ``states`` is null or empty)."""
+    return rows_to_table(json.loads(payload).get("states") or [], schema)
 
 
 class OpenSkyPlugin:
@@ -108,8 +80,8 @@ class OpenSkyPlugin:
     def interval(self) -> int:
         return self.interval_s
 
-    def fetch_rows(self) -> list[tuple]:
-        """One poll = one batch of ordered typed rows (reference:
+    def fetch_rows(self) -> pa.Table:
+        """One poll = one table of ordered typed rows (reference:
         FetchData + the *intended* Response handling, main.go:129-146)."""
         return parse_states_payload(self.http_get(self.url, self.auth))
 
@@ -141,8 +113,32 @@ try:  # pyspark>=4 ships the Python DataSource API
     )
 
     class _SnapshotPartition(InputPartition):
-        def __init__(self, rows: list[tuple]):
-            self.rows = rows
+        """A slice of a poll's table, held as Arrow IPC stream bytes:
+        pickling a table slice would ship the whole poll's buffers to
+        every partition's task."""
+
+        def __init__(self, table: pa.Table):
+            sink = pa.BufferOutputStream()
+            with pa.ipc.new_stream(sink, table.schema) as writer:
+                writer.write_table(table)
+            self.ipc = sink.getvalue()
+
+        def table(self) -> pa.Table:
+            return pa.ipc.open_stream(self.ipc).read_all()
+
+        @property
+        def rows(self) -> list[tuple]:
+            return table_rows(self.table())
+
+    def _partitions(table: pa.Table) -> list[_SnapshotPartition]:
+        """About 1000 rows per partition, and always at least one: an
+        empty poll must still produce an (empty) micro-batch."""
+        n = max(table.num_rows // 1000, 1)
+        size = max(-(-table.num_rows // n), 1)
+        return [
+            _SnapshotPartition(table.slice(i, size))
+            for i in range(0, max(table.num_rows, 1), size)
+        ]
 
     class OpenSkyStreamReader(DataSourceStreamReader):
         """Micro-batch reader: one poll per trigger tick.
@@ -182,7 +178,7 @@ try:  # pyspark>=4 ships the Python DataSource API
                 url=url, auth=(user, pw) if user else None, http_get=http_get
             )
             self._poll = 0
-            self._pending: dict[int, list[tuple]] = {}
+            self._pending: dict[int, pa.Table] = {}
             self._spool_dir = options.get("spool_dir")
             if self._spool_dir:
                 os.makedirs(self._spool_dir, exist_ok=True)
@@ -190,58 +186,52 @@ try:  # pyspark>=4 ships the Python DataSource API
         def _spool_path(self, poll: int) -> str:
             return f"{self._spool_dir}/poll_{poll}.json"
 
-        def _spool_write(self, poll: int, rows: list[tuple]) -> None:
-            """Durable spill before the offset becomes visible (tmp +
-            rename so a crash mid-write never leaves a torn file)."""
+        def _spool_write(self, poll: int, table: pa.Table) -> None:
+            """Durable spill of the poll's rows as a JSON list of rows,
+            before the offset becomes visible (tmp + rename so a crash
+            mid-write never leaves a torn file)."""
             import os
 
             tmp = self._spool_path(poll) + ".tmp"
             with open(tmp, "w") as f:
-                json.dump(rows, f)
+                json.dump(table_rows(table), f)
             os.replace(tmp, self._spool_path(poll))
 
-        def _spool_read(self, poll: int) -> Optional[list[tuple]]:
+        def _spool_read(self, poll: int) -> Optional[pa.Table]:
             import os
 
             path = self._spool_path(poll)
             if not os.path.exists(path):
                 return None
             with open(path) as f:
-                raw = json.load(f)
-            schema = self.plugin.schema()
-            # JSON round-trip widens ints to floats etc. — re-coerce to
-            # the declared schema, same as the live decode path
-            return [
-                tuple(_coerce(v, fld.dataType) for v, fld in zip(row, schema.fields))
-                for row in raw
-            ]
+                # the same decode as a live poll
+                return rows_to_table(json.load(f), self.plugin.schema())
 
         def initialOffset(self) -> dict:
             return {"poll": 0}
 
         def latestOffset(self) -> dict:
             self._poll += 1
-            rows = self.plugin.fetch_rows()
+            table = self.plugin.fetch_rows()
             if self._spool_dir:
-                self._spool_write(self._poll, rows)
-            self._pending[self._poll] = rows
+                self._spool_write(self._poll, table)
+            self._pending[self._poll] = table
             return {"poll": self._poll}
 
         def partitions(self, start: dict, end: dict):
-            rows: list[tuple] = []
+            polls = []
             for p in range(start["poll"] + 1, end["poll"] + 1):
                 got = self._pending.get(p)
                 if got is None and self._spool_dir:
                     got = self._spool_read(p)  # crash-replay path
-                rows.extend(got or [])
-            n = max(len(rows) // 1000, 1)
-            chunks = [rows[i::n] for i in range(n)]
-            # always >= 1 partition: an empty poll must still produce an
-            # (empty) micro-batch, matching OpenSkyBatchReader
-            return [_SnapshotPartition(c) for c in chunks if c] or [_SnapshotPartition([])]
+                if got is not None:
+                    polls.append(got)
+            if not polls:
+                return _partitions(rows_to_table([], self.plugin.schema()))
+            return _partitions(pa.concat_tables(polls))
 
-        def read(self, partition: _SnapshotPartition) -> Iterator[tuple]:
-            yield from partition.rows
+        def read(self, partition: _SnapshotPartition) -> Iterator[pa.RecordBatch]:
+            yield from partition.table().to_batches()
 
         def commit(self, end: dict) -> None:
             import os
@@ -270,13 +260,10 @@ try:  # pyspark>=4 ships the Python DataSource API
             self._stream = OpenSkyStreamReader(options)
 
         def partitions(self):
-            rows = self._stream.plugin.fetch_rows()
-            n = max(len(rows) // 1000, 1)
-            chunks = [rows[i::n] for i in range(n)]
-            return [_SnapshotPartition(c) for c in chunks if c] or [_SnapshotPartition([])]
+            return _partitions(self._stream.plugin.fetch_rows())
 
-        def read(self, partition: _SnapshotPartition) -> Iterator[tuple]:
-            yield from partition.rows
+        def read(self, partition: _SnapshotPartition) -> Iterator[pa.RecordBatch]:
+            yield from partition.table().to_batches()
 
     class OpenSkyDataSource(DataSource):
         """``spark.read(.Stream)?.format("opensky")`` source."""

@@ -13,6 +13,7 @@ import importlib
 import pkgutil
 from typing import Protocol
 
+import pyarrow as pa
 from pyspark.sql import types as T
 
 
@@ -26,7 +27,11 @@ class SourcePlugin(Protocol):
 
     def interval(self) -> int: ...
 
-    def fetch_rows(self) -> list[tuple]: ...
+    def fetch_rows(self) -> pa.Table:
+        """One poll as one ``pyarrow.Table`` with ``schema()``'s columns,
+        order and types (build it with ``sources.batch.rows_to_table``);
+        no rows is a zero-row table."""
+        ...
 
     def validate_config(self, config: dict) -> None: ...
 

@@ -7,8 +7,9 @@ Reference pipeline being re-expressed (SURVEY §3):
     Streaming ``trigger(processingTime=interval)`` driving the source;
   - broadcast distribute: every batch to every (db, table) channel
     (main.go:129-158) -> the SAME DataFrame object handed to every sink
-    target. ``IngestEngine`` builds it from rows already polled into
-    the driver (a local relation), so no target can re-poll the source.
+    target. ``IngestEngine`` builds it from the poll's Arrow table,
+    already decoded in the driver (a local relation, no pandas frame
+    and no per-row serialization), so no target can re-poll the source.
     The ``foreachBatch`` variants persist the batch, because there a
     sink that re-evaluates the frame would recompute (re-poll!) the
     streaming source once per target (SURVEY §4, the one semantic trap);
@@ -29,6 +30,7 @@ import weakref
 from dataclasses import dataclass, field
 from typing import Callable, Optional
 
+import pyarrow as pa
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 
@@ -123,8 +125,8 @@ class IngestEngine:
     re-raises; ``batches_done`` and ``rows_done`` do not advance; targets
     0..k-1 keep the batch (their writes already committed) and targets
     k..N-1 do not get it. Nothing is rolled back, so handing the same
-    rows to ``process_batch`` again delivers them to every target and
-    targets 0..k-1 then hold them twice: delivery is at-least-once per
+    table to ``process_batch`` again delivers it to every target and
+    targets 0..k-1 then hold it twice: delivery is at-least-once per
     target. ``idempotent_fanout_query`` gives exactly-once.
     """
 
@@ -138,7 +140,7 @@ class IngestEngine:
     batches_done: int = field(default=0, init=False)
     rows_done: int = field(default=0, init=False)
 
-    def fetch_with_retry(self) -> list[tuple]:
+    def fetch_with_retry(self) -> pa.Table:
         """reference: warn + 5 s sleep + retry on fetch error
         (main.go:111-122); bounded here so failures surface."""
         attempt = 0
@@ -156,28 +158,24 @@ class IngestEngine:
                 )
                 self.sleep(self.retry_backoff_s)
 
-    def process_batch(self, rows: list[tuple]) -> int:
-        """One micro-batch: rows -> one single-partition DataFrame ->
-        every sink target, in order.
+    def process_batch(self, table: pa.Table) -> int:
+        """One micro-batch: the poll's table -> one single-partition
+        DataFrame -> every sink target, in order. Returns its row count.
 
         An empty poll still counts as a completed batch (the loop's
         progress/bound accounting must advance or ``run(max_batches=N)``
-        would spin forever on a quiet source)."""
-        if rows:
-            # Arrow path: tuples -> pandas -> DataFrame is ~10x faster than
-            # row-at-a-time Python serialization for wide snapshot batches
-            import pandas as pd
-
-            schema = self.plugin.schema()
-            pdf = pd.DataFrame(rows, columns=[f.name for f in schema.fields])
-            # one partition: one file (or JDBC transaction) per target
-            df = self.spark.createDataFrame(pdf, schema=schema).coalesce(1)
+        would spin forever on a quiet source), but runs no Spark job."""
+        n = table.num_rows
+        if n:
+            # the table goes to the JVM as Arrow batches as it is; one
+            # partition: one file (or JDBC transaction) per target
+            df = self.spark.createDataFrame(table, schema=self.plugin.schema()).coalesce(1)
             for target in self.targets:
                 self.sink(df, target)
         self.batches_done += 1
-        self.rows_done += len(rows)
-        log.info("batch %d: %d rows -> %d sinks", self.batches_done, len(rows), len(self.targets))
-        return len(rows)
+        self.rows_done += n
+        log.info("batch %d: %d rows -> %d sinks", self.batches_done, n, len(self.targets))
+        return n
 
     def run(self, duration_s: Optional[float] = None, max_batches: Optional[int] = None) -> None:
         """Poll loop with the plugin's interval (reference: main.go:101-127;

@@ -10,6 +10,7 @@ import json
 import weakref
 from contextlib import contextmanager
 
+import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
@@ -17,6 +18,7 @@ from pyspark.sql import types as T
 
 from mysql_public_data_ingestor_spark.config import DatabasesConfig, ExtraDatabase
 from mysql_public_data_ingestor_spark.schema import FLIGHTS_SCHEMA, schema_from_mysql_map
+from mysql_public_data_ingestor_spark.sources.batch import rows_to_table
 from mysql_public_data_ingestor_spark.sources.opensky import OpenSkyPlugin
 from mysql_public_data_ingestor_spark.streaming.ingest import IngestEngine, ParquetSink
 from mysql_public_data_ingestor_spark.topology import SinkTarget, expand_topology
@@ -45,14 +47,14 @@ class FlakyPlugin(OpenSkyPlugin):
     def __init__(self, fail_times: int, rows: list[tuple]):
         super().__init__(http_get=lambda url, auth: b"")
         self.fail_times = fail_times
-        self.rows = rows
+        self.batch = rows_to_table(rows, self.schema())
         self.calls = 0
 
-    def fetch_rows(self) -> list[tuple]:
+    def fetch_rows(self) -> pa.Table:
         self.calls += 1
         if self.calls <= self.fail_times:
             raise ConnectionError("boom")
-        return self.rows
+        return self.batch
 
 
 @pytest.fixture()
@@ -126,7 +128,10 @@ def test_empty_batch_skips_sinks(spark, topology_cfg):
         sink=lambda df, t: writes.append(t),
         sleep=lambda s: None,
     )
-    eng.run(max_batches=1)
+    # an empty poll is a zero-row table and runs no Spark job
+    with job_group(spark, "empty-poll") as jobs:
+        eng.run(max_batches=1)
+        assert jobs() == 0
     assert writes == []
     assert eng.rows_done == 0
 
@@ -138,7 +143,7 @@ def test_sink_contract_values(spark, tmp_path):
 
     class OneShot(OpenSkyPlugin):
         def fetch_rows(self):
-            return [(1, "value")]
+            return rows_to_table([(1, "value")], schema)
 
         def schema(self):  # type: ignore[override]
             return schema
@@ -176,9 +181,9 @@ def part_files(path) -> list:
 FOUR_TARGETS = [SinkTarget("db1", "t"), SinkTarget("db2", "t"), SinkTarget("db3", "t"), SinkTarget("db3", "u")]
 
 
-def snapshot(n: int, offset: int) -> list[tuple]:
+def snapshot(n: int, offset: int) -> pa.Table:
     base = generate_mock_row(FLIGHTS_SCHEMA)
-    return [(base[0] + offset + i,) + base[1:] for i in range(n)]
+    return rows_to_table([(base[0] + offset + i,) + base[1:] for i in range(n)], FLIGHTS_SCHEMA)
 
 
 def engine_for(spark, targets, sink) -> IngestEngine:
@@ -208,7 +213,7 @@ def test_batch_is_encoded_once_and_byte_copied_to_every_target(spark, tmp_path):
     assert len({f[0].read_bytes() for f in new}) == 1
     assert new[0][0].read_bytes() != files[0][0].read_bytes()
     got = pq.read_table(new[0][0]).column("time").to_pylist()
-    assert sorted(got) == [r[0] for r in second]
+    assert sorted(got) == second.column("time").to_pylist()
     for d in dirs:
         assert spark.read.parquet(str(d)).count() == 50
     assert (eng.batches_done, eng.rows_done) == (2, 50)
@@ -220,6 +225,28 @@ def test_zero_targets_counts_rows_without_a_spark_job(spark):
         assert eng.process_batch(snapshot(7, 0)) == 7
         assert jobs() == 0
     assert (eng.batches_done, eng.rows_done) == (1, 7)
+
+
+def test_batch_reaches_spark_without_a_pandas_frame(spark, tmp_path, monkeypatch):
+    # the poll's Arrow table goes to Spark as it is: no pandas frame on
+    # the batch path, and still one Spark job for all four targets
+    import pandas
+
+    class NoFrame:  # still a type, so isinstance checks against it work
+        def __new__(cls, *args, **kwargs):
+            raise AssertionError("pandas.DataFrame built on the ingest batch path")
+
+    monkeypatch.setattr(pandas, "DataFrame", NoFrame)
+    eng = engine_for(spark, FOUR_TARGETS, ParquetSink(str(tmp_path)))
+    batch = snapshot(25, 0)
+    with job_group(spark, "no-pandas") as jobs:
+        assert eng.process_batch(batch) == 25
+        assert jobs() == 1
+    monkeypatch.undo()
+    for t in FOUR_TARGETS:
+        got = pq.read_table(tmp_path / t.database / t.table)
+        assert got.num_rows == 25
+        assert sorted(got.column("time").to_pylist()) == batch.column("time").to_pylist()
 
 
 

@@ -5,10 +5,13 @@ from __future__ import annotations
 
 import json
 
+import pyarrow as pa
 import pytest
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from mysql_public_data_ingestor_spark.config import MySQLConfig, PoolConfig
 from mysql_public_data_ingestor_spark.schema import FLIGHTS_SCHEMA
+from mysql_public_data_ingestor_spark.sources.batch import table_rows
 from mysql_public_data_ingestor_spark.sources.jdbc import (
     PartitionSpec,
     jdbc_read_options,
@@ -37,7 +40,7 @@ def payload(states) -> bytes:
 
 
 def test_parse_states_ordered_and_typed():
-    rows = parse_states_payload(payload([MOCK_STATE]))
+    rows = table_rows(parse_states_payload(payload([MOCK_STATE])))
     assert len(rows) == 1
     row = rows[0]
     assert row[0] == 1234567890 and isinstance(row[0], int)   # time -> long
@@ -54,7 +57,7 @@ def test_parse_states_float_widening_fixed():
     state = list(MOCK_STATE)
     state[0] = 1234567890.0   # time as float -> must become int
     state[6] = 10              # longitude as int -> must become float
-    rows = parse_states_payload(payload([state]))
+    rows = table_rows(parse_states_payload(payload([state])))
     assert rows[0][0] == 1234567890 and isinstance(rows[0][0], int)
     assert rows[0][6] == 10.0 and isinstance(rows[0][6], float)
 
@@ -62,14 +65,125 @@ def test_parse_states_float_widening_fixed():
 def test_parse_states_sensors_json_roundtrip():
     state = list(MOCK_STATE)
     state[13] = [1, 2, 3]
-    rows = parse_states_payload(payload([state]))
+    rows = table_rows(parse_states_payload(payload([state])))
     assert rows[0][13] == "[1, 2, 3]"
 
 
 def test_parse_short_vector_padded():
-    rows = parse_states_payload(payload([MOCK_STATE[:5]]))
+    rows = table_rows(parse_states_payload(payload([MOCK_STATE[:5]])))
     assert len(rows[0]) == 18
     assert rows[0][5] is None
+
+
+# --- decode semantics: the whole table against the expected typed rows ---
+
+ARROW_FLIGHTS = to_arrow_schema(FLIGHTS_SCHEMA)
+
+
+def decoded(states) -> list[tuple]:
+    table = parse_states_payload(payload(states))
+    assert table.schema == ARROW_FLIGHTS
+    return table_rows(table)
+
+
+def test_decode_json_widened_ints_and_ints_in_double_columns():
+    state, want = list(MOCK_STATE), list(MOCK_STATE)
+    state[0], state[4], state[5] = 1234567890.0, 1234567891.0, 1234567892.0   # long columns
+    want[0], want[4], want[5] = 1234567890, 1234567891, 1234567892
+    state[17], want[17] = 3.0, 3                                               # int column
+    state[6], state[7], state[8], state[14] = 10, -20, 0, 70                   # double columns
+    want[6], want[7], want[8], want[14] = 10.0, -20.0, 0.0, 70.0
+    got = decoded([state, MOCK_STATE])
+    assert got == [tuple(want), tuple(MOCK_STATE)]
+    assert [type(v) for v in got[0]] == [type(v) for v in got[1]]
+    assert isinstance(got[0][0], int) and isinstance(got[0][6], float)
+
+
+def test_decode_nulls_keep_every_column_type():
+    state = [None] * 18
+    state[1] = "abc123"
+    got = decoded([state, MOCK_STATE])
+    assert got == [(None, "abc123") + (None,) * 16, tuple(MOCK_STATE)]
+
+
+def test_decode_pads_short_and_truncates_overlong_vectors():
+    overlong = list(MOCK_STATE) + [99, "extra", None]
+    got = decoded([MOCK_STATE[:5], overlong, MOCK_STATE[:17]])
+    assert got == [
+        tuple(MOCK_STATE[:5]) + (None,) * 13,
+        tuple(MOCK_STATE),
+        tuple(MOCK_STATE[:17]) + (None,),
+    ]
+
+
+def test_decode_sensors_list_becomes_json_string():
+    with_list, with_dict = list(MOCK_STATE), list(MOCK_STATE)
+    with_list[13], with_dict[13] = [1, 2, 3], {"a": [4]}
+    got = decoded([with_list, MOCK_STATE, with_dict])
+    assert [r[13] for r in got] == ["[1, 2, 3]", None, '{"a": [4]}']
+    assert [r[:13] + r[14:] for r in got] == [tuple(MOCK_STATE[:13] + MOCK_STATE[14:])] * 3
+
+
+@pytest.mark.parametrize("states", [None, []], ids=["null", "empty"])
+def test_decode_no_states_is_a_zero_row_table_with_every_column(states):
+    table = parse_states_payload(payload(states))
+    assert table.num_rows == 0
+    assert table.schema == ARROW_FLIGHTS
+    assert table.num_columns == 18
+    assert table_rows(table) == []
+
+
+def test_decode_numeric_strings_cast_like_int_and_float():
+    # Arrow refuses strings in numeric columns; the fallback must give
+    # exactly int() / float() of each cell
+    state, want = list(MOCK_STATE), list(MOCK_STATE)
+    for i, text in [(0, "1234567899"), (5, "-7"), (17, "2")]:
+        state[i], want[i] = text, int(text)
+    for i, text in [(6, "10.5"), (7, "-1e3"), (12, "7")]:
+        state[i], want[i] = text, float(text)
+    assert decoded([state, MOCK_STATE]) == [tuple(want), tuple(MOCK_STATE)]
+
+
+def _reference_cast(value, arrow_type):
+    """The per-cell cast the decode must agree with on every JSON value."""
+    if value is None:
+        return None
+    if pa.types.is_integer(arrow_type):
+        return int(value)
+    if pa.types.is_floating(arrow_type):
+        return float(value)
+    if pa.types.is_boolean(arrow_type):
+        return bool(value)
+    return json.dumps(value) if isinstance(value, (list, dict)) else str(value)
+
+
+JSON_VALUES = [None, True, False, 0, 7, -3, 2.0, -1.5, 0.25, 1e300, "12", "-0.5", "x", [1, "a"], {"k": 1}]
+
+
+@pytest.mark.parametrize("col", range(18), ids=[f.name for f in FLIGHTS_SCHEMA.fields])
+def test_decode_agrees_with_the_per_cell_cast_on_every_json_value(col):
+    # each value alone in its column (Arrow's own conversion where it
+    # accepts it) and all values together (where it does not): the cell
+    # is the reference cast either way, and a value the cast rejects
+    # fails the decode
+    arrow_type = ARROW_FLIGHTS.field(col).type
+    castable = []
+    for v in JSON_VALUES:
+        state = list(MOCK_STATE)
+        state[col] = v
+        try:
+            want = _reference_cast(v, arrow_type)
+            pa.array([want], type=arrow_type)
+        except (TypeError, ValueError, OverflowError, pa.ArrowInvalid):
+            with pytest.raises((TypeError, ValueError, OverflowError, pa.ArrowInvalid)):
+                decoded([state])
+            continue
+        castable.append(v)
+        assert decoded([state])[0][col] == want, v
+    states = [list(MOCK_STATE) for _ in castable]
+    for state, v in zip(states, castable):
+        state[col] = v
+    assert [r[col] for r in decoded(states)] == [_reference_cast(v, arrow_type) for v in castable]
 
 
 def test_fetch_rows_via_fake_http():
@@ -81,6 +195,7 @@ def test_fetch_rows_via_fake_http():
 
     p = OpenSkyPlugin(auth=("u", "p"), http_get=fake_get)
     rows = p.fetch_rows()
+    assert isinstance(rows, pa.Table)
     assert len(rows) == 2
     assert calls[0][1] == ("u", "p")
     assert p.schema() is FLIGHTS_SCHEMA

@@ -1,5 +1,13 @@
 """Ingestion throughput benchmark: synthetic OpenSky snapshots through
-the full fan-out engine (rows -> typed DataFrame -> N parquet sinks).
+the full fan-out engine (payload bytes -> decoded Arrow table -> typed
+DataFrame -> N parquet sinks).
+
+Each batch is fetched from an in-memory transport that returns the
+pre-built payload, so the JSON decode is timed with the rest; only the
+synthetic-data generation is left out. Besides the rows/s totals it
+prints the seconds per batch of each stage: fetch+decode
+(``IngestEngine.fetch_with_retry``), frame (``createDataFrame`` and the
+rest of ``process_batch`` outside the sinks) and sink (all targets).
 
 Context: the reference's configuration bounds it to ~1.3e4 rows/s
 across all sinks (BASELINE.md §A: one 10^4-row snapshot per 60 s poll,
@@ -25,9 +33,8 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from mysql_public_data_ingestor_spark.config import DatabasesConfig, ExtraDatabase
-from mysql_public_data_ingestor_spark.schema import FLIGHTS_SCHEMA
 from mysql_public_data_ingestor_spark.session import get_spark
-from mysql_public_data_ingestor_spark.sources.opensky import OpenSkyPlugin, parse_states_payload
+from mysql_public_data_ingestor_spark.sources.opensky import OpenSkyPlugin
 from mysql_public_data_ingestor_spark.streaming.ingest import IngestEngine, ParquetSink
 from mysql_public_data_ingestor_spark.topology import expand_topology
 
@@ -49,11 +56,10 @@ def main() -> None:
     copies = int(sys.argv[3]) if len(sys.argv) > 3 else 3
 
     spark = get_spark("bench_ingest")
+    # generated once: the measurement excludes synthetic-data generation,
+    # not the decode
     payload = synthetic_payload(rows_per_batch)
-    # pre-parse once so the measurement excludes synthetic-data generation
-    rows = parse_states_payload(payload)
     plugin = OpenSkyPlugin(http_get=lambda u, a: payload, interval_s=0)
-    plugin.fetch_rows = lambda: rows  # type: ignore[method-assign]
 
     cfg = DatabasesConfig(
         prefix="bench_", table_prefix="flights",
@@ -62,14 +68,27 @@ def main() -> None:
     targets = expand_topology(cfg)
     out = tempfile.mkdtemp(prefix="bench_ingest_")
     try:
+        parquet_sink, sink_s = ParquetSink(out), [0.0]
+
+        def timed_sink(df, target) -> None:
+            t = time.perf_counter()
+            parquet_sink(df, target)
+            sink_s[0] += time.perf_counter() - t
+
         eng = IngestEngine(
             spark=spark, plugin=plugin, targets=targets,
-            sink=ParquetSink(out), sleep=lambda s: None,
+            sink=timed_sink, sleep=lambda s: None,
         )
-        eng.process_batch(rows)  # warm-up batch (JVM, codegen)
-        t0 = time.perf_counter()
-        eng.run(max_batches=1 + n_batches)
-        dt = time.perf_counter() - t0
+        eng.process_batch(eng.fetch_with_retry())  # warm-up batch (JVM, codegen)
+        fetch_s = batch_s = sink_s[0] = 0.0
+        for _ in range(n_batches):
+            t0 = time.perf_counter()
+            table = eng.fetch_with_retry()
+            t1 = time.perf_counter()
+            eng.process_batch(table)
+            fetch_s += t1 - t0
+            batch_s += time.perf_counter() - t1
+        dt = fetch_s + batch_s
         measured_rows = rows_per_batch * n_batches
         sink_rows = measured_rows * len(targets)
         print(
@@ -83,6 +102,9 @@ def main() -> None:
                     "rows_per_batch": rows_per_batch,
                     "n_batches": n_batches,
                     "seconds": round(dt, 3),
+                    "fetch_decode_s_per_batch": round(fetch_s / n_batches, 4),
+                    "frame_s_per_batch": round((batch_s - sink_s[0]) / n_batches, 4),
+                    "sink_s_per_batch": round(sink_s[0] / n_batches, 4),
                     "reference_ceiling_rows_per_sec": 1.3e4,
                 }
             )
