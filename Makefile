@@ -1,10 +1,13 @@
 # Convenience targets (mirrors the reference's Makefile role:
 # build/test entry points — reference Makefile:26-46).
 
-.PHONY: test check check-fast check-fuzz check-fuzzu check-fuzzs check-fuzzc bench bench-ingest perfbench-ingest plans
+.PHONY: test test-ingest check check-fast check-fuzz check-fuzzu check-fuzzs check-fuzzc bench bench-ingest perfbench-ingest plans
 
 test:
 	python -m pytest tests/ -x -q
+
+test-ingest:  ## fast gate for the ingest path (~2 min at 4 cores)
+	python -m pytest tests/test_ingest.py tests/test_streaming.py tests/test_exactly_once.py tests/test_sources.py -q
 
 check:        ## driver-style DuckDB-oracle gate at sf0.01
 	python tools/check_correctness.py /root/testdata/sf0.01

@@ -15,7 +15,10 @@ Reference pipeline being re-expressed (SURVEY §3):
     streaming source once per target (SURVEY §4, the one semantic trap);
   - transactional insert per table (main.go:160-212) -> one partition
     per batch, so each target gets one JDBC transaction or one
-    atomically committed parquet file per batch;
+    atomically committed parquet file per batch. ``ParquetSink`` writes
+    an engine batch's file with pyarrow from the poll's table, with no
+    Spark job, and byte-copies it to the other targets; Spark writes
+    only frames the engine did not build (the ``foreachBatch`` paths);
   - bounded demo run (main.go:49-50) -> ``run(duration_s=...)``.
 
 Backpressure is structural: micro-batch N+1 does not start until every
@@ -25,14 +28,19 @@ goroutines (main.go:152-154) cannot pile up here.
 
 from __future__ import annotations
 
+import os
 import time
+import uuid
 import weakref
 from dataclasses import dataclass, field
 from typing import Callable, Optional
 
 import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..logging_util import get_logger
 from ..sources.registry import SourcePlugin
@@ -41,26 +49,44 @@ SinkWriter = Callable[[DataFrame, "object"], None]
 
 log = get_logger("ingest")
 
+# frame -> the Arrow table ``process_batch`` built it from. Weak on the
+# frame: an entry, and with it the table, goes when its batch does.
+_BATCH_TABLES: "weakref.WeakKeyDictionary[DataFrame, pa.Table]" = weakref.WeakKeyDictionary()
+
 
 @dataclass
 class ParquetSink:
     """Filesystem stand-in for the MySQL table sink: each batch is
     appended to ``<path>/<database>/<table>``.
 
-    A batch is encoded once, whatever the number of targets. The first
-    call with a given DataFrame object runs the Spark append and records
-    the ``part-*`` files it committed (the target directory listed
-    before and after the write). A later call with the *same* object
-    copies those files byte for byte into its own target instead of
-    running Spark again. The rule is: same DataFrame object => same
-    batch => same bytes in every target, which is stricter broadcast
-    semantics than re-evaluating the frame once per target. Each copy
-    is written under a hidden ``.``-prefixed name and then renamed, so
-    readers never see a torn file. Files go through the session's
-    Hadoop ``FileSystem``, so any URI Spark can write works. The sink
-    keeps only a weak reference to the last batch's DataFrame: it does
-    not keep a finished batch (and its rows in the JVM) alive, and a
-    later batch cannot be mistaken for it by a reused object id.
+    A batch is encoded once, whatever the number of targets, and with no
+    Spark job when the engine built it. The first call with a given
+    DataFrame object writes the batch's file into its target:
+
+    - A frame ``process_batch`` built from a table in the plugin's Arrow
+      schema, bound for a ``file`` filesystem, is written by pyarrow
+      from that table (``_write_arrow``). The settings follow Spark's
+      writer: snappy, statistics, one row group, and a dictionary only
+      where it pays. No ``_SUCCESS`` marker and no Spark row-metadata
+      key are written: the rename of the hidden ``.part-*.writing`` file
+      to its ``part-*`` name is the commit, and Spark reads the schema
+      from the Parquet types.
+    - Any other frame (a ``foreachBatch`` batch, another filesystem, a
+      table in another schema) takes one Spark append, and the sink
+      records the ``part-*`` files it committed (the target directory
+      listed before and after the write).
+
+    A later call with the *same* object copies those files byte for byte
+    into its own target instead of encoding again. The rule is: same
+    DataFrame object => same batch => same bytes in every target, which
+    is stricter broadcast semantics than re-evaluating the frame once
+    per target. Each copy is written under a hidden ``.``-prefixed name
+    and then renamed, so readers never see a torn file. Copies and
+    renames go through the session's Hadoop ``FileSystem``, so any URI
+    Spark can write works. The sink keeps only a weak reference to the
+    last batch's DataFrame: it does not keep a finished batch (and its
+    rows in the JVM) alive, and a later batch cannot be mistaken for it
+    by a reused object id.
     """
 
     path: str
@@ -88,10 +114,67 @@ class ParquetSink:
                     raise
             return
         self._last_df = None
-        before = _part_files(jvm, hadoop, fs, out)
-        df.write.mode("append").parquet(out.toString())
-        self._last_files = sorted(_part_files(jvm, hadoop, fs, out) - before)
+        table, uri = _BATCH_TABLES.get(df), fs.makeQualified(out).toUri()
+        if table is not None and uri.getScheme() == "file":
+            self._last_files = [_write_arrow(table, hadoop, fs, out, uri.getPath())]
+        else:
+            before = _part_files(jvm, hadoop, fs, out)
+            df.write.mode("append").parquet(out.toString())
+            self._last_files = sorted(_part_files(jvm, hadoop, fs, out) - before)
         self._last_df = weakref.ref(df)
+
+
+def _write_arrow(table: pa.Table, hadoop, fs, out, local_dir: str) -> str:
+    """Write ``table`` as one new ``part-*`` file in the local directory
+    ``out`` (``local_dir`` on disk) and return the file's path.
+
+    pyarrow writes a hidden ``.part-*.writing`` file, which the Hadoop
+    ``FileSystem`` then renames to Spark's file name; a failed write
+    leaves nothing behind."""
+    name = f"part-00000-{uuid.uuid4()}-c000.snappy.parquet"
+    os.makedirs(local_dir, exist_ok=True)
+    tmp = os.path.join(local_dir, f".{name}.writing")
+    dst = hadoop.Path(out, name)
+    try:
+        pq.write_table(table, tmp, **_writer_options(table))
+        if not fs.rename(hadoop.Path(out, f".{name}.writing"), dst):
+            raise OSError(f"could not rename {tmp} to {dst.toString()}")
+    except BaseException:
+        if os.path.exists(tmp):
+            os.remove(tmp)
+        raise
+    return dst.toString()
+
+
+def _writer_options(table: pa.Table) -> dict:
+    """pyarrow writer settings that give the file Spark's writer would
+    (parquet-mr: snappy, statistics, one row group per batch).
+
+    - Dictionary: parquet-mr falls back to PLAIN on a high-cardinality
+      column, where pyarrow would dictionary-encode every column (and
+      write larger files than Spark). A column gets a dictionary only
+      when its distinct values are at most half its non-null cells.
+    - Statistics: pyarrow leaves NaN out of a double column's min/max,
+      parquet-mr does not, and Spark's pushed-down filters read ``NaN``
+      as larger than any number. A column holding NaN gets no statistics,
+      so ``x > 0`` cannot skip a row group whose only positive rows are
+      NaN.
+    - No ``ARROW:schema`` key: Spark reads the Parquet types, and the
+      key only adds bytes to every file.
+    """
+    dictionary, statistics = [], []
+    for name, column in zip(table.column_names, table.columns):
+        if 2 * pc.count_distinct(column).as_py() <= len(column) - column.null_count:
+            dictionary.append(name)
+        if not (pa.types.is_floating(column.type) and pc.any(pc.is_nan(column)).as_py()):
+            statistics.append(name)
+    return {
+        "compression": "snappy",
+        "use_dictionary": dictionary,
+        "write_statistics": statistics,
+        "row_group_size": table.num_rows,
+        "store_schema": False,
+    }
 
 
 def _part_files(jvm, hadoop, fs, out) -> set[str]:
@@ -169,7 +252,10 @@ class IngestEngine:
         if n:
             # the table goes to the JVM as Arrow batches as it is; one
             # partition: one file (or JDBC transaction) per target
-            df = self.spark.createDataFrame(table, schema=self.plugin.schema()).coalesce(1)
+            schema = self.plugin.schema()
+            df = self.spark.createDataFrame(table, schema=schema).coalesce(1)
+            if table.schema.equals(to_arrow_schema(schema)):
+                _BATCH_TABLES[df] = table  # ParquetSink writes it without Spark
             for target in self.targets:
                 self.sink(df, target)
         self.batches_done += 1

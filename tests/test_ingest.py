@@ -20,6 +20,7 @@ from mysql_public_data_ingestor_spark.config import DatabasesConfig, ExtraDataba
 from mysql_public_data_ingestor_spark.schema import FLIGHTS_SCHEMA, schema_from_mysql_map
 from mysql_public_data_ingestor_spark.sources.batch import rows_to_table
 from mysql_public_data_ingestor_spark.sources.opensky import OpenSkyPlugin
+from mysql_public_data_ingestor_spark.streaming import ingest
 from mysql_public_data_ingestor_spark.streaming.ingest import IngestEngine, ParquetSink
 from mysql_public_data_ingestor_spark.topology import SinkTarget, expand_topology
 
@@ -160,7 +161,7 @@ def test_sink_contract_values(spark, tmp_path):
     assert [(r.field1, r.field2) for r in got] == [(1, "value")]
 
 
-# --- encode once: one Spark job per batch, byte-copied to every target ---
+# --- encode once: one pyarrow write per batch, byte-copied to every target ---
 
 
 @contextmanager
@@ -197,7 +198,7 @@ def test_batch_is_encoded_once_and_byte_copied_to_every_target(spark, tmp_path):
     first = snapshot(30, 0)
     with job_group(spark, "encode-once-1") as jobs:
         assert eng.process_batch(first) == 30
-        assert jobs() == 1
+        assert jobs() == 0
     files = [part_files(d) for d in dirs]
     assert all(len(f) == 1 for f in files)
     assert len({f[0].read_bytes() for f in files}) == 1
@@ -207,7 +208,7 @@ def test_batch_is_encoded_once_and_byte_copied_to_every_target(spark, tmp_path):
     second = snapshot(20, 1000)
     with job_group(spark, "encode-once-2") as jobs:
         assert eng.process_batch(second) == 20
-        assert jobs() == 1
+        assert jobs() == 0
     new = [sorted(set(part_files(d)) - set(f)) for d, f in zip(dirs, files)]
     assert all(len(f) == 1 for f in new)
     assert len({f[0].read_bytes() for f in new}) == 1
@@ -229,7 +230,7 @@ def test_zero_targets_counts_rows_without_a_spark_job(spark):
 
 def test_batch_reaches_spark_without_a_pandas_frame(spark, tmp_path, monkeypatch):
     # the poll's Arrow table goes to Spark as it is: no pandas frame on
-    # the batch path, and still one Spark job for all four targets
+    # the batch path, and no Spark job for all four targets
     import pandas
 
     class NoFrame:  # still a type, so isinstance checks against it work
@@ -241,7 +242,7 @@ def test_batch_reaches_spark_without_a_pandas_frame(spark, tmp_path, monkeypatch
     batch = snapshot(25, 0)
     with job_group(spark, "no-pandas") as jobs:
         assert eng.process_batch(batch) == 25
-        assert jobs() == 1
+        assert jobs() == 0
     monkeypatch.undo()
     for t in FOUR_TARGETS:
         got = pq.read_table(tmp_path / t.database / t.table)
@@ -252,22 +253,28 @@ def test_batch_reaches_spark_without_a_pandas_frame(spark, tmp_path, monkeypatch
 
 def test_finished_batch_is_not_kept_alive(spark, tmp_path):
     # once process_batch returns, neither the engine nor the sink holds
-    # the batch's DataFrame (and with it the rows in the JVM)
-    sink, frames = ParquetSink(str(tmp_path)), []
+    # the batch's DataFrame (and with it the rows in the JVM), and the
+    # frame -> table map no longer holds the batch's table
+    sink, frames, recorded = ParquetSink(str(tmp_path)), [], []
+    batch = snapshot(5, 0)
 
     def recording(df, target):
         frames.append(weakref.ref(df))
+        recorded.append(ingest._BATCH_TABLES.get(df) is batch)
         sink(df, target)
 
     eng = engine_for(spark, FOUR_TARGETS, recording)
-    assert eng.process_batch(snapshot(5, 0)) == 5
+    assert eng.process_batch(batch) == 5
     gc.collect()
     assert len(frames) == 4 and all(f() is None for f in frames)
+    assert recorded == [True] * 4
+    assert all(t is not batch for t in ingest._BATCH_TABLES.values())
 
 @pytest.mark.parametrize("k", [0, 2], ids=["first-spark-write", "later-copy"])
 def test_sink_failure_on_target_k_stops_the_batch(spark, tmp_path, k):
     # a regular file where target k's directory belongs makes the sink
-    # raise on k: in the Spark append for k=0, in the byte copy for k=2
+    # raise on k: in the first (pyarrow) write for k=0, in the byte copy
+    # for k=2
     dirs = [tmp_path / t.database / t.table for t in FOUR_TARGETS]
     dirs[k].parent.mkdir(parents=True, exist_ok=True)
     dirs[k].write_text("obstruction")
@@ -301,3 +308,99 @@ def test_repeated_target_raises_instead_of_overwriting_its_copy(spark, tmp_path)
         eng.process_batch(snapshot(5, 0))
     assert (eng.batches_done, eng.rows_done) == (0, 0)
     assert len(part_files(tmp_path / "db1" / "t")) == 1
+
+
+# --- the Arrow-written file against Spark's, and the Spark fallback ---
+
+
+def mixed_snapshot(n: int) -> pa.Table:
+    """NaN and null doubles, null cells and ``sensors`` JSON strings.
+    Every ``icao24`` is distinct, ``origin_country`` takes two values,
+    and no ``longitude`` is positive except the NaNs (Spark reads NaN as
+    larger than any number)."""
+    col = {f.name: i for i, f in enumerate(FLIGHTS_SCHEMA.fields)}
+    rows = []
+    for i in range(n):
+        r = list(generate_mock_row(FLIGHTS_SCHEMA))
+        r[col["time"]] += i
+        r[col["icao24"]] = f"{i:06x}"
+        r[col["callsign"]] = None if i % 5 == 0 else f"CS{i % 7}"
+        r[col["origin_country"]] = ("Germany", "France")[i % 2]
+        r[col["longitude"]] = (float("nan"), None, -1.5 * i, -0.25)[i % 4]
+        r[col["latitude"]] = None if i % 6 == 0 else i / 3
+        r[col["velocity"]] = float("nan") if i % 9 == 0 else 200.0 + i
+        r[col["sensors"]] = json.dumps([i, i + 1]) if i % 3 else None
+        r[col["squawk"]] = None if i % 2 else f"{i:04d}"
+        rows.append(tuple(r))
+    return rows_to_table(rows, FLIGHTS_SCHEMA)
+
+
+def test_arrow_written_target_reads_like_the_spark_written_one(spark, tmp_path):
+    batch = mixed_snapshot(40)
+    target = SinkTarget("db", "t")
+    arrow_dir, spark_dir = tmp_path / "arrow" / "db" / "t", tmp_path / "spark" / "db" / "t"
+    eng = engine_for(spark, [target], ParquetSink(str(tmp_path / "arrow")))
+    with job_group(spark, "parity-arrow") as jobs:
+        assert eng.process_batch(batch) == 40
+        assert jobs() == 0
+    # a frame the engine did not build takes the Spark write
+    ParquetSink(str(tmp_path / "spark"))(
+        spark.createDataFrame(batch, schema=FLIGHTS_SCHEMA).coalesce(1), target)
+    assert (spark_dir / "_SUCCESS").exists()
+    assert not (arrow_dir / "_SUCCESS").exists()  # the rename is the commit
+    assert [p.name for p in arrow_dir.iterdir() if p.name.startswith(".")] == []
+
+    a, s = spark.read.parquet(str(arrow_dir)), spark.read.parquet(str(spark_dir))
+    want = [(f.name, f.dataType) for f in FLIGHTS_SCHEMA.fields]
+    assert [(f.name, f.dataType) for f in a.schema.fields] == want
+    assert [(f.name, f.dataType) for f in s.schema.fields] == want
+    assert a.count() == s.count() == 40
+    assert a.exceptAll(s).count() == 0 and s.exceptAll(a).count() == 0
+    # the pushed-down filter must not skip the row group of the NaNs
+    positive = s.filter("longitude > 0").count()
+    assert positive == 10
+    assert a.filter("longitude > 0").count() == positive
+    assert a.filter("velocity > 1000").count() == s.filter("velocity > 1000").count() == 5
+
+    (part,) = part_files(arrow_dir)
+    meta = pq.ParquetFile(part).metadata
+    assert meta.num_row_groups == 1
+    chunks = {meta.schema.column(i).name: meta.row_group(0).column(i) for i in range(meta.num_columns)}
+    assert not any("DICTIONARY" in e for e in chunks["icao24"].encodings)
+    assert any("DICTIONARY" in e for e in chunks["origin_country"].encodings)
+    assert chunks["icao24"].compression == "SNAPPY"
+    assert chunks["latitude"].statistics.has_min_max
+    assert not chunks["longitude"].is_stats_set
+
+
+def test_frame_not_built_by_the_engine_takes_one_spark_write(spark, tmp_path):
+    # a foreachBatch-style frame has no table on record: one Spark write
+    # to the first target, then byte copies to the others
+    sink = ParquetSink(str(tmp_path))
+    batch = snapshot(15, 0)
+    df = spark.createDataFrame(batch, schema=FLIGHTS_SCHEMA).coalesce(1)
+    with job_group(spark, "foreign-frame") as jobs:
+        for t in FOUR_TARGETS:
+            sink(df, t)
+        assert jobs() == 1
+    files = [part_files(tmp_path / t.database / t.table) for t in FOUR_TARGETS]
+    assert all(len(f) == 1 for f in files)
+    assert len({f[0].read_bytes() for f in files}) == 1
+    assert sorted(pq.read_table(files[3][0]).column("time").to_pylist()) == batch.column("time").to_pylist()
+
+
+def test_table_outside_the_plugin_schema_takes_the_spark_write(spark, tmp_path):
+    # Spark casts a bigint column that arrives as int32; a file written
+    # from the table as it is would hold int32, so Spark writes it
+    batch = snapshot(10, 0)
+    narrow = batch.set_column(0, "time", batch.column("time").cast(pa.int32()))
+    eng = engine_for(spark, FOUR_TARGETS, ParquetSink(str(tmp_path)))
+    with job_group(spark, "other-schema") as jobs:
+        assert eng.process_batch(narrow) == 10
+        assert jobs() == 1
+    files = [part_files(tmp_path / t.database / t.table) for t in FOUR_TARGETS]
+    assert all(len(f) == 1 for f in files)
+    assert len({f[0].read_bytes() for f in files}) == 1
+    got = pq.read_table(files[0][0])
+    assert got.schema.field("time").type == pa.int64()
+    assert sorted(got.column("time").to_pylist()) == batch.column("time").to_pylist()

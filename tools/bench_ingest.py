@@ -7,7 +7,9 @@ pre-built payload, so the JSON decode is timed with the rest; only the
 synthetic-data generation is left out. Besides the rows/s totals it
 prints the seconds per batch of each stage: fetch+decode
 (``IngestEngine.fetch_with_retry``), frame (``createDataFrame`` and the
-rest of ``process_batch`` outside the sinks) and sink (all targets).
+rest of ``process_batch`` outside the sinks) and sink (all targets: one
+pyarrow write of the batch's table into the first, no Spark job, then a
+byte copy of that file into each other target).
 
 Context: the reference's configuration bounds it to ~1.3e4 rows/s
 across all sinks (BASELINE.md §A: one 10^4-row snapshot per 60 s poll,
