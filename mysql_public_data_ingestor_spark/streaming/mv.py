@@ -57,6 +57,41 @@ def read_mv(spark, mv_path: str) -> DataFrame:
     return spark.read.parquet(os.path.join(mv_path, f"epoch={epoch}"))
 
 
+def _commit_epoch(batch_df: DataFrame, epoch_id: int, mv_path: str, state, merge) -> None:
+    """The epoch commit both MVs share: skip an already-committed epoch,
+    else write ``state(batch)`` (first epoch) or ``merge`` of the last
+    committed version unioned with it as ``epoch=<epoch_id>``."""
+    prev = latest_epoch(mv_path)
+    if prev is not None and prev >= epoch_id:
+        return  # replayed epoch: already committed, no-op
+    delta = state(batch_df)
+    if prev is None:
+        merged = delta
+    else:
+        old = batch_df.sparkSession.read.parquet(
+            os.path.join(mv_path, f"epoch={prev}")
+        )
+        merged = merge(old.unionByName(delta))
+    merged.coalesce(1).write.mode("overwrite").parquet(
+        os.path.join(mv_path, f"epoch={epoch_id}")
+    )
+
+
+def _foreach_batch_query(
+    stream: DataFrame, merge, mv_path: str, checkpoint_path: str, missing: str
+):
+    """writeStream query folding every micro-batch into the MV at
+    ``mv_path`` with ``merge``; raises ``ValueError(missing)`` without a
+    checkpoint (see ``maintain_priority_mv``)."""
+    if not checkpoint_path:
+        raise ValueError(missing)
+    return (
+        stream.writeStream.foreachBatch(lambda df, eid: merge(df, eid, mv_path))
+        .option("checkpointLocation", checkpoint_path)
+        .outputMode("update")
+    )
+
+
 def merge_epoch(batch_df: DataFrame, epoch_id: int, mv_path: str) -> None:
     """Fold one micro-batch into the MV (idempotent per epoch).
 
@@ -64,23 +99,11 @@ def merge_epoch(batch_df: DataFrame, epoch_id: int, mv_path: str) -> None:
     replay after a crash mid-write of this epoch re-runs the merge and
     ``mode("overwrite")`` replaces the partial directory.
     """
-    prev = latest_epoch(mv_path)
-    if prev is not None and prev >= epoch_id:
-        return  # replayed epoch: already committed, no-op
-    delta = _mv_state(batch_df)
-    if prev is None:
-        merged = delta
-    else:
-        old = batch_df.sparkSession.read.parquet(
-            os.path.join(mv_path, f"epoch={prev}")
-        )
-        merged = (
-            old.unionByName(delta)
-            .groupBy(MV_KEY)
-            .agg(F.sum("n_orders").alias("n_orders"), F.sum("cents").alias("cents"))
-        )
-    merged.coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(mv_path, f"epoch={epoch_id}")
+    _commit_epoch(
+        batch_df, epoch_id, mv_path, _mv_state,
+        lambda both: both.groupBy(MV_KEY).agg(
+            F.sum("n_orders").alias("n_orders"), F.sum("cents").alias("cents")
+        ),
     )
 
 
@@ -93,18 +116,11 @@ def maintain_priority_mv(stream_orders: DataFrame, mv_path: str, checkpoint_path
     is silently dropped. With it, Structured Streaming resumes epoch
     ids monotonically and replays exactly the uncommitted batch.
     """
-    if not checkpoint_path:
-        raise ValueError(
-            "maintain_priority_mv requires a checkpointLocation: restart "
-            "without one restarts epoch ids at 0 and the epoch guard "
-            "silently drops every post-restart batch"
-        )
-    return (
-        stream_orders.writeStream.foreachBatch(
-            lambda df, eid: merge_epoch(df, eid, mv_path)
-        )
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("update")
+    return _foreach_batch_query(
+        stream_orders, merge_epoch, mv_path, checkpoint_path,
+        "maintain_priority_mv requires a checkpointLocation: restart "
+        "without one restarts epoch ids at 0 and the epoch guard "
+        "silently drops every post-restart batch",
     )
 
 
@@ -132,23 +148,11 @@ def _bitmap_state(events_df: DataFrame) -> DataFrame:
 def merge_bitmap_epoch(batch_df: DataFrame, epoch_id: int, mv_path: str) -> None:
     """Fold one micro-batch of events into the user-bitmap MV
     (idempotent per epoch; same commit rules as ``merge_epoch``)."""
-    prev = latest_epoch(mv_path)
-    if prev is not None and prev >= epoch_id:
-        return
-    delta = _bitmap_state(batch_df)
-    if prev is None:
-        merged = delta
-    else:
-        old = batch_df.sparkSession.read.parquet(
-            os.path.join(mv_path, f"epoch={prev}")
-        )
-        merged = (
-            old.unionByName(delta)
-            .groupBy("day", "bucket")
-            .agg(F.bitmap_or_agg(F.col("bm")).alias("bm"))
-        )
-    merged.coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(mv_path, f"epoch={epoch_id}")
+    _commit_epoch(
+        batch_df, epoch_id, mv_path, _bitmap_state,
+        lambda both: both.groupBy("day", "bucket").agg(
+            F.bitmap_or_agg(F.col("bm")).alias("bm")
+        ),
     )
 
 
@@ -156,17 +160,10 @@ def maintain_user_bitmap_mv(stream_events: DataFrame, mv_path: str, checkpoint_p
     """writeStream query keeping the daily user-bitmap MV fresh.
     ``checkpoint_path`` required for the same epoch-monotonicity reason
     as ``maintain_priority_mv``."""
-    if not checkpoint_path:
-        raise ValueError(
-            "maintain_user_bitmap_mv requires a checkpointLocation (see "
-            "maintain_priority_mv)"
-        )
-    return (
-        stream_events.writeStream.foreachBatch(
-            lambda df, eid: merge_bitmap_epoch(df, eid, mv_path)
-        )
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("update")
+    return _foreach_batch_query(
+        stream_events, merge_bitmap_epoch, mv_path, checkpoint_path,
+        "maintain_user_bitmap_mv requires a checkpointLocation (see "
+        "maintain_priority_mv)",
     )
 
 

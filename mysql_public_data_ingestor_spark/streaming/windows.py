@@ -6,19 +6,36 @@ and assert equivalence with the batch result — the strongest check
 available for streaming semantics without an external system.
 
 Operators: watermarked tumbling/sliding windows, session windows,
-watermarked stream dedup, custom stateful running aggregation via
-``applyInPandasWithState`` (the extension point for operators Spark
-lacks natively).
+watermarked stream dedup, stream-static and stream-stream joins, and
+the custom stateful monitors Spark lacks natively: running per-user
+totals, CUSUM, Holt, Page-Hinkley, incremental OLS, Shewhart c-chart
+and EWMA.
+
+Each stateful monitor is written once, as a pure fold
+``fold(key, state, frames) -> (new_state, out_row)`` over one key's
+micro-batch frames, with its initial state, output schema, state schema
+and ValueState name (a ``_Monitor``). Two adapters, each written once,
+run every fold: ``_run_apply_in_pandas`` through an
+``applyInPandasWithState`` ``GroupState``, and ``_run_transform_with_state``
+through the ``_FoldProcessor`` ``StatefulProcessor`` holding one
+``ValueState`` (the ``*_tws`` builders). The day- or week-ordered
+monitors share one out-of-order guard, ``_in_order``.
+
+The state layout is a checkpoint format: the ``_*_STATE`` strings, the
+order of the state tuples and the ValueState names (``totals``, ``ph``,
+``ols``, ``cc``, ``ew``) are what a restarted query restores, so
+changing any of them orphans existing checkpoints.
 """
 
 from __future__ import annotations
 
-from typing import Any, Iterator, Tuple
+from typing import Any, Callable, Iterable, Iterator, NamedTuple, Tuple
 
 import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..functions.exact import exact_sum
@@ -74,23 +91,129 @@ def dedup_within_watermark(events: DataFrame, watermark: str = "1 hour") -> Data
     )
 
 
+# --- one fold per stateful monitor, two state-API adapters -----------------
+
+class _Monitor(NamedTuple):
+    """A stateful monitor: ``fold(key, state, frames)`` folds one key's
+    micro-batch frames into its state tuple and returns ``(new_state,
+    out_row)``; ``out_row`` is in ``schema`` column order. ``state_name``
+    is the ValueState the transformWithState adapter stores the state
+    under (None where the monitor has no transformWithState twin)."""
+
+    key: str
+    fold: Callable[[Tuple[Any, ...], tuple, Iterable[pd.DataFrame]], Tuple[tuple, tuple]]
+    init: tuple
+    schema: str
+    state_schema: str
+    state_name: str | None = None
+
+
+def _day_key(day) -> int:
+    """Monotonic int encoding of a 'yyyy-MM-dd' day for state storage
+    (string days sort the same as their yyyymmdd integers)."""
+    return int(str(day).replace("-", ""))
+
+
+def _in_order(
+    frames: Iterable[pd.DataFrame], order_col: str, value_col: str, last: int,
+    key: Callable[[Any], int] = _day_key,
+) -> Tuple[list, int, int]:
+    """The out-of-order guard every day- or week-ordered monitor shares.
+
+    Concatenates one key's frames, sorts them by ``order_col`` and keeps
+    each row whose ``key(order)`` is after ``last`` (the state's last
+    processed day or week), advancing ``last`` as it goes. Rows at or
+    before it are dropped and counted instead of being folded into the
+    integer recursion (ADVICE r8). Returns ``(kept, last, n_late)`` with
+    ``kept`` the in-order ``(key, int(value))`` pairs.
+    """
+    rows = pd.concat(list(frames)).sort_values(order_col)
+    kept, n_late = [], 0
+    for k, x in zip(rows[order_col], rows[value_col]):
+        k = key(k)
+        if k <= last:
+            n_late += 1
+            continue
+        last = k
+        kept.append((k, int(x)))
+    return kept, last, n_late
+
+
+def _out_frame(schema: str, row: tuple) -> pd.DataFrame:
+    """A fold's output row as a one-row frame named by ``schema``."""
+    names = [field.split()[0] for field in schema.split(",")]
+    return pd.DataFrame({name: [value] for name, value in zip(names, row)})
+
+
+def _run_apply_in_pandas(df: DataFrame, monitor: _Monitor) -> DataFrame:
+    """Run ``monitor`` through ``applyInPandasWithState``, its state in
+    the ``GroupState`` (Update mode, no timeout)."""
+
+    def fn(key, pdfs, state: GroupState) -> Iterator[pd.DataFrame]:
+        new_state, row = monitor.fold(key, state.get if state.exists else monitor.init, pdfs)
+        state.update(new_state)
+        yield _out_frame(monitor.schema, row)
+
+    return df.groupBy(monitor.key).applyInPandasWithState(
+        fn,
+        outputStructType=monitor.schema,
+        stateStructType=monitor.state_schema,
+        outputMode="update",
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
+
+
+class _FoldProcessor(StatefulProcessor):
+    """The transformWithStateInPandas adapter: runs a monitor's fold
+    with its state in one typed ValueState named ``state_name``."""
+
+    def __init__(self, monitor: _Monitor) -> None:
+        self._monitor = monitor
+
+    def init(self, handle: StatefulProcessorHandle) -> None:
+        self._state = handle.getValueState(self._monitor.state_name, self._monitor.state_schema)
+
+    def handleInputRows(self, key, rows, timerValues) -> Iterator[pd.DataFrame]:
+        prior = self._state.get() if self._state.exists() else None
+        new_state, row = self._monitor.fold(
+            key, tuple(prior) if prior else self._monitor.init, rows
+        )
+        self._state.update(new_state)
+        yield _out_frame(self._monitor.schema, row)
+
+    def close(self) -> None:
+        pass
+
+
+def _run_transform_with_state(df: DataFrame, monitor: _Monitor) -> DataFrame:
+    """Run ``monitor`` through ``transformWithStateInPandas`` (Update
+    mode, no timers); start the query under ``rocksdb_state_store``."""
+    return df.groupBy(monitor.key).transformWithStateInPandas(
+        statefulProcessor=_FoldProcessor(monitor),
+        outputStructType=monitor.schema,
+        outputMode="Update",
+        timeMode="None",
+    )
+
+
 _RUNNING_SCHEMA = "user_id long, n_events long, total_value double"
 _STATE_SCHEMA = "n long, total double"
 
 
-def _running_totals_fn(
-    key: Tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
+def _fold_running_totals(key, state, pdfs):
     (user_id,) = key
-    if state.exists:
-        n, total = state.get
-    else:
-        n, total = 0, 0.0
+    n, total = state
+    # one sum per frame: checkpointed totals were accumulated this way,
+    # and summing the concatenated frames rounds differently
     for pdf in pdfs:
         n += len(pdf)
         total += float(pdf["value"].sum())
-    state.update((n, total))
-    yield pd.DataFrame({"user_id": [user_id], "n_events": [n], "total_value": [total]})
+    return (n, total), (user_id, n, total)
+
+
+_RUNNING = _Monitor(
+    "user_id", _fold_running_totals, (0, 0.0), _RUNNING_SCHEMA, _STATE_SCHEMA, "totals"
+)
 
 
 def running_totals_per_user(events: DataFrame) -> DataFrame:
@@ -98,16 +221,7 @@ def running_totals_per_user(events: DataFrame) -> DataFrame:
     micro-batches via applyInPandasWithState — the pattern for any
     operator Structured Streaming lacks natively (reference has no
     analog; this is the §2.B custom-stateful extension point)."""
-    return (
-        events.groupBy("user_id")
-        .applyInPandasWithState(
-            _running_totals_fn,
-            outputStructType=_RUNNING_SCHEMA,
-            stateStructType=_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
+    return _run_apply_in_pandas(events, _RUNNING)
 
 
 def stream_static_enrich(events: DataFrame, dim: DataFrame) -> DataFrame:
@@ -152,36 +266,7 @@ def running_totals_per_user_tws(events: DataFrame) -> DataFrame:
     Runtime requires ``google.protobuf`` (the state-server worker
     protocol); the test suite skips where it is absent.
     """
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-
-    class RunningTotals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("totals", "n long, total double")
-
-        def handleInputRows(self, key, rows, timerValues) -> Iterator[pd.DataFrame]:
-            prior = self._state.get() if self._state.exists() else None
-            n, total = (prior[0], prior[1]) if prior else (0, 0.0)
-            for pdf in rows:
-                n += len(pdf)
-                total += float(pdf["value"].sum())
-            self._state.update((n, total))
-            (user_id,) = key
-            yield pd.DataFrame(
-                {"user_id": [user_id], "n_events": [n], "total_value": [total]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    return (
-        events.groupBy("user_id")
-        .transformWithStateInPandas(
-            statefulProcessor=RunningTotals(),
-            outputStructType=_RUNNING_SCHEMA,
-            outputMode="Update",
-            timeMode="None",
-        )
-    )
+    return _run_transform_with_state(events, _RUNNING)
 
 
 # --- stateful Holt / CUSUM monitors (round 8, VERDICT r7 item 5) ----------
@@ -193,10 +278,25 @@ _CUSUM_SCHEMA = (
 _CUSUM_STATE = "n long, s_pos long, s_neg long, n_alarms long, last_day long"
 
 
-def _day_key(day) -> int:
-    """Monotonic int encoding of a 'yyyy-MM-dd' day for state storage
-    (string days sort the same as their yyyymmdd integers)."""
-    return int(str(day).replace("-", ""))
+def _cusum(baselines: dict, h_micro: int) -> _Monitor:
+    def fold(key, state, pdfs):
+        (event_type,) = key
+        n, s_pos, s_neg, n_alarms, last_day = state
+        mu = int(baselines.get(event_type, 0))
+        days, last_day, n_late = _in_order(pdfs, "day", "x_micro", last_day)
+        for _, x in days:
+            d = x - mu
+            s_pos = max(0, s_pos + d)
+            s_neg = max(0, s_neg - d)
+            if s_pos >= h_micro or s_neg >= h_micro:
+                n_alarms += 1
+            n += 1
+        return (
+            (n, s_pos, s_neg, n_alarms, last_day),
+            (event_type, n, s_pos, s_neg, n_alarms, n_late),
+        )
+
+    return _Monitor("event_type", fold, (0, 0, 0, 0, -1), _CUSUM_SCHEMA, _CUSUM_STATE)
 
 
 def cusum_monitor_per_type(
@@ -225,46 +325,7 @@ def cusum_monitor_per_type(
     keyed state — and the emitted row per (type, batch) is Update-mode
     compatible.
     """
-
-    def fn(key, pdfs, state: GroupState):
-        (event_type,) = key
-        n, s_pos, s_neg, n_alarms, last_day = (
-            state.get if state.exists else (0, 0, 0, 0, -1)
-        )
-        mu = int(baselines.get(event_type, 0))
-        rows = pd.concat(list(pdfs)).sort_values("day")
-        n_late = 0
-        for day, x in zip(rows["day"], rows["x_micro"]):
-            dk = _day_key(day)
-            if dk <= last_day:
-                n_late += 1
-                continue
-            last_day = dk
-            d = int(x) - mu
-            s_pos = max(0, s_pos + d)
-            s_neg = max(0, s_neg - d)
-            if s_pos >= h_micro or s_neg >= h_micro:
-                n_alarms += 1
-            n += 1
-        state.update((n, s_pos, s_neg, n_alarms, last_day))
-        yield pd.DataFrame(
-            {
-                "event_type": [event_type],
-                "n_days": [n],
-                "s_pos": [s_pos],
-                "s_neg": [s_neg],
-                "n_alarms": [n_alarms],
-                "n_late": [n_late],
-            }
-        )
-
-    return daily.groupBy("event_type").applyInPandasWithState(
-        fn,
-        outputStructType=_CUSUM_SCHEMA,
-        stateStructType=_CUSUM_STATE,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return _run_apply_in_pandas(daily, _cusum(baselines, h_micro))
 
 
 _HOLT_SCHEMA = (
@@ -272,6 +333,24 @@ _HOLT_SCHEMA = (
     " n_late long"
 )
 _HOLT_STATE = "n long, level long, trend long, last_day long"
+
+
+def _fold_holt(key, state, pdfs):
+    (event_type,) = key
+    n, level, trend, last_day = state
+    days, last_day, n_late = _in_order(pdfs, "day", "x_micro", last_day)
+    for _, x in days:
+        if n == 0:
+            level, trend = x, 0
+        else:
+            new_level = (x + level + trend) // 2
+            trend = (trend + (new_level - level)) // 2
+            level = new_level
+        n += 1
+    return (n, level, trend, last_day), (event_type, n, level, trend, n_late)
+
+
+_HOLT = _Monitor("event_type", _fold_holt, (0, 0, 0, -1), _HOLT_SCHEMA, _HOLT_STATE)
 
 
 def holt_tracker_per_type(daily: DataFrame) -> DataFrame:
@@ -293,44 +372,7 @@ def holt_tracker_per_type(daily: DataFrame) -> DataFrame:
     in ``n_late`` rather than silently corrupting the recursion
     (ADVICE r8).
     """
-
-    def fn(key, pdfs, state: GroupState):
-        (event_type,) = key
-        n, level, trend, last_day = state.get if state.exists else (0, 0, 0, -1)
-        rows = pd.concat(list(pdfs)).sort_values("day")
-        n_late = 0
-        for day, x in zip(rows["day"], rows["x_micro"]):
-            dk = _day_key(day)
-            if dk <= last_day:
-                n_late += 1
-                continue
-            last_day = dk
-            x = int(x)
-            if n == 0:
-                level, trend = x, 0
-            else:
-                new_level = (x + level + trend) // 2
-                trend = (trend + (new_level - level)) // 2
-                level = new_level
-            n += 1
-        state.update((n, level, trend, last_day))
-        yield pd.DataFrame(
-            {
-                "event_type": [event_type],
-                "n_days": [n],
-                "level_micro": [level],
-                "trend_micro": [trend],
-                "n_late": [n_late],
-            }
-        )
-
-    return daily.groupBy("event_type").applyInPandasWithState(
-        fn,
-        outputStructType=_HOLT_SCHEMA,
-        stateStructType=_HOLT_STATE,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return _run_apply_in_pandas(daily, _HOLT)
 
 
 # --- stateful Page-Hinkley / incremental-OLS monitors (round 9, ----------
@@ -341,6 +383,29 @@ _PH_SCHEMA = (
     " n_late long"
 )
 _PH_STATE = "n long, m_t long, min_m long, ph_max long, n_alarms long, last_day long"
+
+
+def _page_hinkley(baselines_milli: dict, delta_milli: int, h_milli: int) -> _Monitor:
+    def fold(key, state, pdfs):
+        (event_type,) = key
+        n, m_t, min_m, ph_max, n_alarms, last_day = state
+        mu = int(baselines_milli.get(event_type, 0))
+        days, last_day, n_late = _in_order(pdfs, "day", "x", last_day)
+        ph_t = m_t - min_m
+        for _, x in days:
+            m_t += 1000 * x - mu - delta_milli
+            min_m = min(min_m, m_t)
+            ph_t = m_t - min_m
+            ph_max = max(ph_max, ph_t)
+            if ph_t >= h_milli:
+                n_alarms += 1
+            n += 1
+        return (
+            (n, m_t, min_m, ph_max, n_alarms, last_day),
+            (event_type, n, ph_t, ph_max, n_alarms, n_late),
+        )
+
+    return _Monitor("event_type", fold, (0, 0, 0, 0, 0, -1), _PH_SCHEMA, _PH_STATE, "ph")
 
 
 def page_hinkley_monitor_per_type(
@@ -360,47 +425,8 @@ def page_hinkley_monitor_per_type(
     micro-batch rows are dropped and surfaced via ``n_late`` (same
     guard as the CUSUM/Holt trackers, ADVICE r8).
     """
-
-    def fn(key, pdfs, state: GroupState):
-        (event_type,) = key
-        n, m_t, min_m, ph_max, n_alarms, last_day = (
-            state.get if state.exists else (0, 0, 0, 0, 0, -1)
-        )
-        mu = int(baselines_milli.get(event_type, 0))
-        rows = pd.concat(list(pdfs)).sort_values("day")
-        n_late = 0
-        ph_t = m_t - min_m
-        for day, x in zip(rows["day"], rows["x"]):
-            dk = _day_key(day)
-            if dk <= last_day:
-                n_late += 1
-                continue
-            last_day = dk
-            m_t += 1000 * int(x) - mu - delta_milli
-            min_m = min(min_m, m_t)
-            ph_t = m_t - min_m
-            ph_max = max(ph_max, ph_t)
-            if ph_t >= h_milli:
-                n_alarms += 1
-            n += 1
-        state.update((n, m_t, min_m, ph_max, n_alarms, last_day))
-        yield pd.DataFrame(
-            {
-                "event_type": [event_type],
-                "n_days": [n],
-                "ph_t": [ph_t],
-                "ph_max": [ph_max],
-                "n_alarms": [n_alarms],
-                "n_late": [n_late],
-            }
-        )
-
-    return daily.groupBy("event_type").applyInPandasWithState(
-        fn,
-        outputStructType=_PH_SCHEMA,
-        stateStructType=_PH_STATE,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _run_apply_in_pandas(
+        daily, _page_hinkley(baselines_milli, delta_milli, h_milli)
     )
 
 
@@ -413,6 +439,30 @@ _OLS_STATE = "m long, sx long, sy long, sxy long, sxx long, last_w long"
 def _half_up_int(num: int, den: int) -> int:
     mag = (2 * abs(num) + den) // (2 * den)
     return -mag if num < 0 else mag
+
+
+def _fold_ols(key, state, pdfs):
+    (metric,) = key
+    m, sx, sy, sxy, sxx, last_w = state
+    points, last_w, n_late = _in_order(pdfs, "w", "y_u", last_w, key=int)
+    for w, y_u in points:
+        m += 1
+        sx += w
+        sy += y_u
+        sxy += w * y_u
+        sxx += w * w
+    num = m * sxy - sx * sy
+    den = m * sxx - sx * sx
+    slope = _half_up_int(num, den) if m >= 2 and den != 0 else 0
+    intercept = (
+        _half_up_int(sy * den - num * sx, m * den)
+        if m >= 2 and den != 0
+        else (sy if m == 1 else 0)
+    )
+    return (m, sx, sy, sxy, sxx, last_w), (metric, m, slope, intercept, n_late)
+
+
+_OLS = _Monitor("metric", _fold_ols, (0, 0, 0, 0, 0, -1), _OLS_SCHEMA, _OLS_STATE, "ols")
 
 
 def retention_ols_tracker(points: DataFrame) -> DataFrame:
@@ -433,51 +483,7 @@ def retention_ols_tracker(points: DataFrame) -> DataFrame:
     state's last offset are dropped and flagged (``n_late``),
     protecting the monotone-maturation contract.
     """
-
-    def fn(key, pdfs, state: GroupState):
-        (metric,) = key
-        m, sx, sy, sxy, sxx, last_w = (
-            state.get if state.exists else (0, 0, 0, 0, 0, -1)
-        )
-        rows = pd.concat(list(pdfs)).sort_values("w")
-        n_late = 0
-        for w, y_u in zip(rows["w"], rows["y_u"]):
-            w, y_u = int(w), int(y_u)
-            if w <= last_w:
-                n_late += 1
-                continue
-            last_w = w
-            m += 1
-            sx += w
-            sy += y_u
-            sxy += w * y_u
-            sxx += w * w
-        state.update((m, sx, sy, sxy, sxx, last_w))
-        num = m * sxy - sx * sy
-        den = m * sxx - sx * sx
-        slope = _half_up_int(num, den) if m >= 2 and den != 0 else 0
-        intercept = (
-            _half_up_int(sy * den - num * sx, m * den)
-            if m >= 2 and den != 0
-            else (sy if m == 1 else 0)
-        )
-        yield pd.DataFrame(
-            {
-                "metric": [metric],
-                "m": [m],
-                "slope_micro": [slope],
-                "intercept_micro": [intercept],
-                "n_late": [n_late],
-            }
-        )
-
-    return points.groupBy("metric").applyInPandasWithState(
-        fn,
-        outputStructType=_OLS_SCHEMA,
-        stateStructType=_OLS_STATE,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return _run_apply_in_pandas(points, _OLS)
 
 
 # --- transformWithState twins of the round-9 monitors (round 10, ----------
@@ -535,55 +541,8 @@ def page_hinkley_monitor_per_type_tws(
     Spark 3-compatible twin. Requires google.protobuf at runtime
     (state-server worker protocol); tests skip where absent.
     """
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-
-    class PageHinkley(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("ph", _PH_STATE)
-
-        def handleInputRows(self, key, rows, timerValues) -> Iterator[pd.DataFrame]:
-            prior = self._state.get() if self._state.exists() else None
-            n, m_t, min_m, ph_max, n_alarms, last_day = (
-                tuple(prior) if prior else (0, 0, 0, 0, 0, -1)
-            )
-            (event_type,) = key
-            mu = int(baselines_milli.get(event_type, 0))
-            pdf = pd.concat(list(rows)).sort_values("day")
-            n_late = 0
-            ph_t = m_t - min_m
-            for day, x in zip(pdf["day"], pdf["x"]):
-                dk = _day_key(day)
-                if dk <= last_day:
-                    n_late += 1
-                    continue
-                last_day = dk
-                m_t += 1000 * int(x) - mu - delta_milli
-                min_m = min(min_m, m_t)
-                ph_t = m_t - min_m
-                ph_max = max(ph_max, ph_t)
-                if ph_t >= h_milli:
-                    n_alarms += 1
-                n += 1
-            self._state.update((n, m_t, min_m, ph_max, n_alarms, last_day))
-            yield pd.DataFrame(
-                {
-                    "event_type": [event_type],
-                    "n_days": [n],
-                    "ph_t": [ph_t],
-                    "ph_max": [ph_max],
-                    "n_alarms": [n_alarms],
-                    "n_late": [n_late],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return daily.groupBy("event_type").transformWithStateInPandas(
-        statefulProcessor=PageHinkley(),
-        outputStructType=_PH_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
+    return _run_transform_with_state(
+        daily, _page_hinkley(baselines_milli, delta_milli, h_milli)
     )
 
 
@@ -596,59 +555,7 @@ def retention_ols_tracker_tws(points: DataFrame) -> DataFrame:
     same integers in the same order and emit the same exact half-up
     slope/intercept.
     """
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-
-    class RetentionOLS(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("ols", _OLS_STATE)
-
-        def handleInputRows(self, key, rows, timerValues) -> Iterator[pd.DataFrame]:
-            prior = self._state.get() if self._state.exists() else None
-            m, sx, sy, sxy, sxx, last_w = (
-                tuple(prior) if prior else (0, 0, 0, 0, 0, -1)
-            )
-            (metric,) = key
-            pdf = pd.concat(list(rows)).sort_values("w")
-            n_late = 0
-            for w, y_u in zip(pdf["w"], pdf["y_u"]):
-                w, y_u = int(w), int(y_u)
-                if w <= last_w:
-                    n_late += 1
-                    continue
-                last_w = w
-                m += 1
-                sx += w
-                sy += y_u
-                sxy += w * y_u
-                sxx += w * w
-            self._state.update((m, sx, sy, sxy, sxx, last_w))
-            num = m * sxy - sx * sy
-            den = m * sxx - sx * sx
-            slope = _half_up_int(num, den) if m >= 2 and den != 0 else 0
-            intercept = (
-                _half_up_int(sy * den - num * sx, m * den)
-                if m >= 2 and den != 0
-                else (sy if m == 1 else 0)
-            )
-            yield pd.DataFrame(
-                {
-                    "metric": [metric],
-                    "m": [m],
-                    "slope_micro": [slope],
-                    "intercept_micro": [intercept],
-                    "n_late": [n_late],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return points.groupBy("metric").transformWithStateInPandas(
-        statefulProcessor=RetentionOLS(),
-        outputStructType=_OLS_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
-    )
+    return _run_transform_with_state(points, _OLS)
 
 
 # ---------------------------------------------------------------------------
@@ -661,6 +568,33 @@ _CC_SCHEMA = (
     " last_flag long, n_late long"
 )
 _CC_STATE = "n long, s long, n_high long, n_low long, last_day long"
+
+
+def _fold_cchart(key, state, pdfs):
+    (event_type,) = key
+    n, s, n_high, n_low, last_day = state
+    days, last_day, n_late = _in_order(pdfs, "day", "x", last_day)
+    last_flag = 0
+    for _, x in days:
+        n += 1
+        s += x
+        dev = n * x - s
+        if dev * dev > 9 * s * n:
+            if dev > 0:
+                n_high += 1
+                last_flag = 1
+            else:
+                n_low += 1
+                last_flag = -1
+        else:
+            last_flag = 0
+    return (
+        (n, s, n_high, n_low, last_day),
+        (event_type, n, n_high, n_low, last_flag, n_late),
+    )
+
+
+_CCHART = _Monitor("event_type", _fold_cchart, (0, 0, 0, 0, -1), _CC_SCHEMA, _CC_STATE, "cc")
 
 
 def cchart_monitor_per_type(daily: DataFrame) -> DataFrame:
@@ -681,52 +615,7 @@ def cchart_monitor_per_type(daily: DataFrame) -> DataFrame:
     ``n_late`` (the standing CUSUM/Holt/PH guard). last_flag is the
     most recent day's verdict (+1 high, −1 low, 0 in-control).
     """
-
-    def fn(key, pdfs, state: GroupState):
-        (event_type,) = key
-        n, s, n_high, n_low, last_day = (
-            state.get if state.exists else (0, 0, 0, 0, -1)
-        )
-        rows = pd.concat(list(pdfs)).sort_values("day")
-        n_late = 0
-        last_flag = 0
-        for day, x in zip(rows["day"], rows["x"]):
-            dk = _day_key(day)
-            if dk <= last_day:
-                n_late += 1
-                continue
-            last_day = dk
-            n += 1
-            s += int(x)
-            dev = n * int(x) - s
-            if dev * dev > 9 * s * n:
-                if dev > 0:
-                    n_high += 1
-                    last_flag = 1
-                else:
-                    n_low += 1
-                    last_flag = -1
-            else:
-                last_flag = 0
-        state.update((n, s, n_high, n_low, last_day))
-        yield pd.DataFrame(
-            {
-                "event_type": [event_type],
-                "n_days": [n],
-                "n_high": [n_high],
-                "n_low": [n_low],
-                "last_flag": [last_flag],
-                "n_late": [n_late],
-            }
-        )
-
-    return daily.groupBy("event_type").applyInPandasWithState(
-        fn,
-        outputStructType=_CC_SCHEMA,
-        stateStructType=_CC_STATE,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return _run_apply_in_pandas(daily, _CCHART)
 
 
 def cchart_monitor_per_type_tws(daily: DataFrame) -> DataFrame:
@@ -736,60 +625,7 @@ def cchart_monitor_per_type_tws(daily: DataFrame) -> DataFrame:
     pattern). Requires google.protobuf at runtime; tests skip where
     absent.
     """
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-
-    class CChart(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("cc", _CC_STATE)
-
-        def handleInputRows(self, key, rows, timerValues) -> Iterator[pd.DataFrame]:
-            prior = self._state.get() if self._state.exists() else None
-            n, s, n_high, n_low, last_day = (
-                tuple(prior) if prior else (0, 0, 0, 0, -1)
-            )
-            (event_type,) = key
-            pdf = pd.concat(list(rows)).sort_values("day")
-            n_late = 0
-            last_flag = 0
-            for day, x in zip(pdf["day"], pdf["x"]):
-                dk = _day_key(day)
-                if dk <= last_day:
-                    n_late += 1
-                    continue
-                last_day = dk
-                n += 1
-                s += int(x)
-                dev = n * int(x) - s
-                if dev * dev > 9 * s * n:
-                    if dev > 0:
-                        n_high += 1
-                        last_flag = 1
-                    else:
-                        n_low += 1
-                        last_flag = -1
-                else:
-                    last_flag = 0
-            self._state.update((n, s, n_high, n_low, last_day))
-            yield pd.DataFrame(
-                {
-                    "event_type": [event_type],
-                    "n_days": [n],
-                    "n_high": [n_high],
-                    "n_low": [n_low],
-                    "last_flag": [last_flag],
-                    "n_late": [n_late],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return daily.groupBy("event_type").transformWithStateInPandas(
-        statefulProcessor=CChart(),
-        outputStructType=_CC_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
-    )
+    return _run_transform_with_state(daily, _CCHART)
 
 
 _EW_SCHEMA = (
@@ -797,6 +633,38 @@ _EW_SCHEMA = (
     " n_low long, last_flag long, n_late long"
 )
 _EW_STATE = "n long, s long, z long, n_high long, n_low long, last_day long"
+
+
+def _fold_ewma(key, state, pdfs):
+    (event_type,) = key
+    n, s, z, n_high, n_low, last_day = state
+    days, last_day, n_late = _in_order(pdfs, "day", "x", last_day)
+    last_flag = 0
+    for _, x in days:
+        n += 1
+        s += x
+        if n == 1:
+            z = 1_000_000 * x
+        else:
+            num = 1_000_000 * x + 7 * z
+            z = (2 * num + 8) // 16  # half-up /8 (num >= 0)
+        dev = n * z - 1_000_000 * s
+        if 5 * dev * dev > 3 * 10**12 * s * n:
+            if dev > 0:
+                n_high += 1
+                last_flag = 1
+            else:
+                n_low += 1
+                last_flag = -1
+        else:
+            last_flag = 0
+    return (
+        (n, s, z, n_high, n_low, last_day),
+        (event_type, n, z, n_high, n_low, last_flag, n_late),
+    )
+
+
+_EWMA = _Monitor("event_type", _fold_ewma, (0, 0, 0, 0, 0, -1), _EW_SCHEMA, _EW_STATE, "ew")
 
 
 def ewma_monitor_per_type(daily: DataFrame) -> DataFrame:
@@ -820,58 +688,7 @@ def ewma_monitor_per_type(daily: DataFrame) -> DataFrame:
     State is 5 longs + the last closed day; out-of-order micro-batch
     rows are dropped and surfaced via ``n_late`` (the standing guard).
     """
-
-    def fn(key, pdfs, state: GroupState):
-        (event_type,) = key
-        n, s, z, n_high, n_low, last_day = (
-            state.get if state.exists else (0, 0, 0, 0, 0, -1)
-        )
-        rows = pd.concat(list(pdfs)).sort_values("day")
-        n_late = 0
-        last_flag = 0
-        for day, x in zip(rows["day"], rows["x"]):
-            dk = _day_key(day)
-            if dk <= last_day:
-                n_late += 1
-                continue
-            last_day = dk
-            n += 1
-            s += int(x)
-            if n == 1:
-                z = 1_000_000 * int(x)
-            else:
-                num = 1_000_000 * int(x) + 7 * z
-                z = (2 * num + 8) // 16  # half-up /8 (num >= 0)
-            dev = n * z - 1_000_000 * s
-            if 5 * dev * dev > 3 * 10**12 * s * n:
-                if dev > 0:
-                    n_high += 1
-                    last_flag = 1
-                else:
-                    n_low += 1
-                    last_flag = -1
-            else:
-                last_flag = 0
-        state.update((n, s, z, n_high, n_low, last_day))
-        yield pd.DataFrame(
-            {
-                "event_type": [event_type],
-                "n_days": [n],
-                "ewma_micro": [z],
-                "n_high": [n_high],
-                "n_low": [n_low],
-                "last_flag": [last_flag],
-                "n_late": [n_late],
-            }
-        )
-
-    return daily.groupBy("event_type").applyInPandasWithState(
-        fn,
-        outputStructType=_EW_SCHEMA,
-        stateStructType=_EW_STATE,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return _run_apply_in_pandas(daily, _EWMA)
 
 
 def ewma_monitor_per_type_tws(daily: DataFrame) -> DataFrame:
@@ -881,63 +698,4 @@ def ewma_monitor_per_type_tws(daily: DataFrame) -> DataFrame:
     twin pattern). Requires google.protobuf at runtime; tests skip
     where absent.
     """
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-
-    class Ewma(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("ew", _EW_STATE)
-
-        def handleInputRows(self, key, rows, timerValues) -> Iterator[pd.DataFrame]:
-            prior = self._state.get() if self._state.exists() else None
-            n, s, z, n_high, n_low, last_day = (
-                tuple(prior) if prior else (0, 0, 0, 0, 0, -1)
-            )
-            (event_type,) = key
-            pdf = pd.concat(list(rows)).sort_values("day")
-            n_late = 0
-            last_flag = 0
-            for day, x in zip(pdf["day"], pdf["x"]):
-                dk = _day_key(day)
-                if dk <= last_day:
-                    n_late += 1
-                    continue
-                last_day = dk
-                n += 1
-                s += int(x)
-                if n == 1:
-                    z = 1_000_000 * int(x)
-                else:
-                    num = 1_000_000 * int(x) + 7 * z
-                    z = (2 * num + 8) // 16
-                dev = n * z - 1_000_000 * s
-                if 5 * dev * dev > 3 * 10**12 * s * n:
-                    if dev > 0:
-                        n_high += 1
-                        last_flag = 1
-                    else:
-                        n_low += 1
-                        last_flag = -1
-                else:
-                    last_flag = 0
-            self._state.update((n, s, z, n_high, n_low, last_day))
-            yield pd.DataFrame(
-                {
-                    "event_type": [event_type],
-                    "n_days": [n],
-                    "ewma_micro": [z],
-                    "n_high": [n_high],
-                    "n_low": [n_low],
-                    "last_flag": [last_flag],
-                    "n_late": [n_late],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return daily.groupBy("event_type").transformWithStateInPandas(
-        statefulProcessor=Ewma(),
-        outputStructType=_EW_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
-    )
+    return _run_transform_with_state(daily, _EWMA)

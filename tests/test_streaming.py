@@ -5,6 +5,8 @@ stateful operator, streaming fan-out, and the OpenSky DataSource.
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 import pytest
 
 from pyspark.sql import functions as F
@@ -112,6 +114,21 @@ def test_stateful_running_totals(spark, sf_dir, events_stream):
     got_m = {r.user_id: r.n for r in got.collect()}
     exp_m = {r.user_id: r.n for r in expect.collect()}
     assert got_m == exp_m
+    # the running total of value tracks the batch sum per user
+    got_t = {
+        r.user_id: r.total
+        for r in spark.sql(
+            "SELECT user_id, max_by(total_value, n_events) AS total FROM run_out"
+            " GROUP BY user_id"
+        ).collect()
+    }
+    exp_t = {
+        r.user_id: r.total
+        for r in t.events.groupBy("user_id").agg(F.sum("value").alias("total")).collect()
+    }
+    assert got_t.keys() == exp_t.keys()
+    for user_id, total in exp_t.items():
+        assert got_t[user_id] == pytest.approx(total, rel=1e-9), user_id
 
 
 def test_streaming_fanout_foreachBatch(spark, sf_dir, tmp_path):
@@ -1157,3 +1174,437 @@ def test_streaming_ewma_tws_twin_matches(spark, sf_dir, tmp_path):
     for et, sr in series.items():
         n, z, n_high, n_low, last_flag = _ewma_fold(sr)
         assert got[et] == (n, z, n_high, n_low, last_flag), et
+
+
+def test_ewma_monitor_state_survives_query_restart(spark, sf_dir, tmp_path):
+    """Two availableNow runs of the EWMA monitor over one checkpoint,
+    with the later half of the days added between them: the second run
+    restores each type's state from the checkpoint, so its last row
+    equals the single-pass recursion over ALL days."""
+    t = Tables(spark, sf_dir)
+    daily = (
+        t.events.select(
+            "event_type", F.to_date(F.col("ts")).cast("string").alias("day")
+        )
+        .groupBy("event_type", "day")
+        .agg(F.count(F.lit(1)).alias("x"))
+    )
+    series: dict = {}
+    for r in daily.collect():
+        series.setdefault(r.event_type, []).append((r.day, int(r.x)))
+    days = sorted({d for sr in series.values() for d, _ in sr})
+    cut = days[len(days) // 2]
+    src = str(tmp_path / "ew_restart_src")
+    rows: list = []
+
+    def run_once():
+        stream = (
+            spark.readStream.schema(daily.schema)
+            .format("parquet")
+            .option("recursiveFileLookup", "true")
+            .load(src)
+        )
+        q = (
+            sw.ewma_monitor_per_type(stream)
+            .writeStream.foreachBatch(lambda df, _: rows.extend(df.collect()))
+            .outputMode("update")
+            .option("checkpointLocation", str(tmp_path / "ew_restart_ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        try:
+            q.awaitTermination()
+        finally:
+            q.stop()
+
+    daily.filter(F.col("day") < cut).coalesce(1).write.parquet(src + "/chunk=0")
+    run_once()
+    n_first = len(rows)
+    assert n_first > 0
+    daily.filter(F.col("day") >= cut).coalesce(1).write.parquet(src + "/chunk=1")
+    run_once()
+    assert len(rows) > n_first
+    last: dict = {}
+    for r in rows:
+        if r.event_type not in last or r.n_days > last[r.event_type].n_days:
+            last[r.event_type] = r
+    assert last.keys() == series.keys()
+    for et, sr in series.items():
+        r = last[et]
+        assert (r.n_days, r.ewma_micro, r.n_high, r.n_low, r.last_flag) == _ewma_fold(sr), et
+    assert sum(r.n_late for r in rows) == 0
+
+
+# --- off-Spark drive of both state-API adapters ----------------------------
+#
+# A fake ``groupBy`` captures what each builder hands to Spark: the
+# applyInPandasWithState function or the transformWithStateInPandas
+# StatefulProcessor, with their keyword arguments. Fake GroupState,
+# handle and ValueState objects then hold the state while the test feeds
+# fixed micro-batch sequences key by key, so both adapters run on hosts
+# without google.protobuf (which the transformWithState runtime needs).
+
+
+def _plain(value):
+    """numpy scalars to Python, as Spark's state serializer does."""
+    return value.item() if hasattr(value, "item") else value
+
+
+class _FakeGroupState:
+    def __init__(self):
+        self.value = None
+
+    @property
+    def exists(self):
+        return self.value is not None
+
+    @property
+    def get(self):
+        return tuple(self.value)
+
+    def update(self, value):
+        self.value = tuple(_plain(v) for v in value)
+
+
+class _FakeValueState:
+    """One ValueState; Spark scopes it to the key being processed."""
+
+    def __init__(self):
+        self.by_key: dict = {}
+        self.key = None
+
+    def exists(self):
+        return self.key in self.by_key
+
+    def get(self):
+        return self.by_key[self.key] if self.exists() else None
+
+    def update(self, value):
+        self.by_key[self.key] = tuple(_plain(v) for v in value)
+
+
+class _FakeHandle:
+    def __init__(self):
+        self.states: dict = {}
+
+    def getValueState(self, name, schema):
+        assert name not in self.states
+        self.states[name] = (schema, _FakeValueState())
+        return self.states[name][1]
+
+
+class _FakeGrouped:
+    def __init__(self, column):
+        self.column = column
+
+    def applyInPandasWithState(self, fn, **kwargs):
+        return ("apply", self.column, fn, kwargs)
+
+    def transformWithStateInPandas(self, **kwargs):
+        return ("tws", self.column, kwargs.pop("statefulProcessor"), kwargs)
+
+
+class _FakeFrame:
+    def groupBy(self, column):
+        return _FakeGrouped(column)
+
+
+def _drive(plan, batches):
+    """Run a captured plan over ``batches`` (each a {key: [frames]}) the
+    way Spark does after shipping it to a worker: unpickle it once, then
+    call it per key per micro-batch. Returns the emitted rows per batch,
+    the final state per key and what the plan passed to Spark."""
+    from pyspark import cloudpickle
+
+    api, column, fn, kwargs = plan
+    fn = cloudpickle.loads(cloudpickle.dumps(fn))
+    emitted, states, handle = [], {}, _FakeHandle()
+    if api == "tws":
+        fn.init(handle)
+        assert len(handle.states) == 1
+        ((name, (schema, value_state)),) = handle.states.items()
+    for batch in batches:
+        rows = []
+        for key, frames in batch.items():
+            if api == "apply":
+                state = states.setdefault(key, _FakeGroupState())
+                out = fn((key,), iter(frames), state)
+            else:
+                value_state.key = key
+                out = fn.handleInputRows((key,), iter(frames), None)
+            for pdf in out:
+                rows += [tuple(_plain(v) for v in r) for r in pdf.itertuples(index=False)]
+        emitted.append(rows)
+    if api == "apply":
+        final = {k: s.value for k, s in states.items()}
+        return emitted, final, column, kwargs, None
+    return emitted, value_state.by_key, column, kwargs, (name, schema)
+
+
+_DAYS = [f"2024-01-{d:02d}" for d in range(1, 11)]
+_DAY_X = {
+    "click": [10, 12, 9, 11, 60, 62, 61, 59, 63, 65],
+    "view": [5, 5, 6, 4, 5, 6, 5, 4, 20, 5],
+}
+
+
+def _day_batches(value_col, scale):
+    """Four micro-batches per event type over days 1-10: the first
+    holds days 1-4 out of order in two frames, the second repeats day 4
+    with another value, the third brings days 2 and 3 again (out of
+    order) beside day 8, the last days 10 and 9. The guard must keep
+    exactly days 1-10 with their first values; n_late per batch is
+    0, 1, 2, 0."""
+
+    def frame(key, picks):
+        return pd.DataFrame(
+            {
+                "event_type": [key] * len(picks),
+                "day": [_DAYS[d - 1] for d, _ in picks],
+                value_col: np.array([x * scale for _, x in picks], dtype="int64"),
+            }
+        )
+
+    batches = []
+    for layout in (
+        [[3, 1], [4, 2]],
+        [[(4, 99), 5, 6, 7]],
+        [[(2, 50), 8], [(3, 70)]],
+        [[10, 9]],
+    ):
+        batch = {}
+        for key, xs in _DAY_X.items():
+            batch[key] = [
+                frame(key, [p if isinstance(p, tuple) else (p, xs[p - 1]) for p in f])
+                for f in layout
+            ]
+        batches.append(batch)
+    series = {key: [(_DAYS[i], x * scale) for i, x in enumerate(xs)] for key, xs in _DAY_X.items()}
+    return batches, series
+
+
+def _ols_batches():
+    def y(metric, w):
+        return 5_000_000 - 300_000 * w + (17_000 * w * w if metric == "b" else 0)
+
+    def frame(metric, picks):
+        return pd.DataFrame(
+            {
+                "metric": [metric] * len(picks),
+                "w": np.array([w for w, _ in picks], dtype="int64"),
+                "y_u": np.array([v for _, v in picks], dtype="int64"),
+            }
+        )
+
+    batches = []
+    for layout in ([[3, 1], [2]], [[(2, 7), 4, 5]], [[(1, -3), 6]], [[8, 7]]):
+        batches.append(
+            {
+                m: [frame(m, [p if isinstance(p, tuple) else (p, y(m, p)) for p in f]) for f in layout]
+                for m in ("a", "b")
+            }
+        )
+    return batches, {m: [(w, y(m, w)) for w in range(1, 9)] for m in ("a", "b")}
+
+
+def _cusum_ref(series, mu, h):
+    s_pos = s_neg = n_alarms = 0
+    for _, x in sorted(series):
+        d = int(x) - mu
+        s_pos = max(0, s_pos + d)
+        s_neg = max(0, s_neg - d)
+        if s_pos >= h or s_neg >= h:
+            n_alarms += 1
+    return len(series), s_pos, s_neg, n_alarms
+
+
+def _holt_ref(series):
+    n = level = trend = 0
+    for _, x in sorted(series):
+        x = int(x)
+        if n == 0:
+            level, trend = x, 0
+        else:
+            new_level = (x + level + trend) // 2
+            trend = (trend + (new_level - level)) // 2
+            level = new_level
+        n += 1
+    return n, level, trend
+
+
+def _ph_ref(series, mu, delta, h):
+    m_t = min_m = ph_max = n_alarms = 0
+    ph_t = 0
+    for _, x in sorted(series):
+        m_t += 1000 * x - mu - delta
+        min_m = min(min_m, m_t)
+        ph_t = m_t - min_m
+        ph_max = max(ph_max, ph_t)
+        if ph_t >= h:
+            n_alarms += 1
+    return len(series), ph_t, ph_max, n_alarms
+
+
+def _ols_ref(points):
+    def half_up(num, den):
+        mag = (2 * abs(num) + den) // (2 * den)
+        return -mag if num < 0 else mag
+
+    m = len(points)
+    sx = sum(w for w, _ in points)
+    sy = sum(y for _, y in points)
+    sxy = sum(w * y for w, y in points)
+    sxx = sum(w * w for w, _ in points)
+    num, den = m * sxy - sx * sy, m * sxx - sx * sx
+    return m, half_up(num, den), half_up(sy * den - num * sx, m * den)
+
+
+_CUSUM_MU = {"click": 35_000_000, "view": 6_000_000}
+_PH_MU = {"click": 30_000, "view": 6_000}
+
+# builder -> (args, group column, output schema, state schema, ValueState
+# name of the _tws twin or None). The schema strings and names are the
+# monitors' checkpoint format: they must never change.
+_MONITORS = {
+    "running_totals_per_user": (
+        (), "user_id", "user_id long, n_events long, total_value double",
+        "n long, total double", "totals",
+    ),
+    "cusum_monitor_per_type": (
+        (_CUSUM_MU, 40_000_000), "event_type",
+        "event_type string, n_days long, s_pos long, s_neg long, n_alarms long, n_late long",
+        "n long, s_pos long, s_neg long, n_alarms long, last_day long", None,
+    ),
+    "holt_tracker_per_type": (
+        (), "event_type",
+        "event_type string, n_days long, level_micro long, trend_micro long, n_late long",
+        "n long, level long, trend long, last_day long", None,
+    ),
+    "page_hinkley_monitor_per_type": (
+        (_PH_MU, 500, 30_000), "event_type",
+        "event_type string, n_days long, ph_t long, ph_max long, n_alarms long, n_late long",
+        "n long, m_t long, min_m long, ph_max long, n_alarms long, last_day long", "ph",
+    ),
+    "retention_ols_tracker": (
+        (), "metric",
+        "metric string, m long, slope_micro long, intercept_micro long, n_late long",
+        "m long, sx long, sy long, sxy long, sxx long, last_w long", "ols",
+    ),
+    "cchart_monitor_per_type": (
+        (), "event_type",
+        "event_type string, n_days long, n_high long, n_low long, last_flag long, n_late long",
+        "n long, s long, n_high long, n_low long, last_day long", "cc",
+    ),
+    "ewma_monitor_per_type": (
+        (), "event_type",
+        "event_type string, n_days long, ewma_micro long, n_high long,"
+        " n_low long, last_flag long, n_late long",
+        "n long, s long, z long, n_high long, n_low long, last_day long", "ew",
+    ),
+}
+
+
+def _oracle(builder, args):
+    """Fixed batches for ``builder`` and, per key, the expected last
+    emitted row (key and n_late left out) from the recursions above,
+    which never import the package."""
+    if builder == "running_totals_per_user":
+        values = {1: [[2.5, 0.1], [7.0]], 2: [[1e-3]], 3: [[4.25, 4.25, 1.0], [0.3]]}
+        batches = [
+            {u: [pd.DataFrame({"user_id": np.array([u] * len(v), dtype="int64"), "value": v})
+                 for v in frames]
+             for u, frames in values.items()},
+            {1: [pd.DataFrame({"user_id": np.array([1], dtype="int64"), "value": [3.0]})]},
+        ]
+        all_values = {u: [v for f in fr for v in f] for u, fr in values.items()}
+        all_values[1].append(3.0)
+        return batches, {u: (len(v), sum(v)) for u, v in all_values.items()}, None
+    if builder == "retention_ols_tracker":
+        batches, points = _ols_batches()
+        return batches, {m: _ols_ref(p) for m, p in points.items()}, [0, 1, 1, 0]
+    micro = builder in ("cusum_monitor_per_type", "holt_tracker_per_type")
+    batches, series = _day_batches("x_micro" if micro else "x", 1_000_000 if micro else 1)
+    ref = {
+        "cusum_monitor_per_type": lambda et, sr: _cusum_ref(sr, args[0][et], args[1]),
+        "holt_tracker_per_type": lambda et, sr: _holt_ref(sr),
+        "page_hinkley_monitor_per_type": lambda et, sr: _ph_ref(sr, args[0][et], *args[1:]),
+        "cchart_monitor_per_type": lambda et, sr: _cchart_fold(sr),
+        "ewma_monitor_per_type": lambda et, sr: _ewma_fold(sr),
+    }[builder]
+    return batches, {et: ref(et, sr) for et, sr in series.items()}, [0, 1, 2, 0]
+
+
+@pytest.mark.parametrize("builder", sorted(_MONITORS))
+def test_monitor_adapters_off_spark(builder):
+    """Each monitor's applyInPandasWithState form, driven off-Spark over
+    micro-batches with an out-of-order batch and a repeated day, ends
+    on the independent recursion's values and hands Spark the
+    checkpoint-format schemas; its transformWithStateInPandas twin
+    (where it has one) emits the same rows and keeps the same state in
+    a ValueState of the same name, after a cloudpickle round-trip."""
+    args, column, schema, state_schema, state_name = _MONITORS[builder]
+    batches, want, late = _oracle(builder, args)
+    rows, states, got_column, kwargs, _ = _drive(
+        getattr(sw, builder)(_FakeFrame(), *args), batches
+    )
+    assert got_column == column
+    assert kwargs == {
+        "outputStructType": schema,
+        "stateStructType": state_schema,
+        "outputMode": "update",
+        "timeoutConf": "NoTimeout",
+    }
+    last = {r[0]: r for batch in rows for r in batch}
+    assert last.keys() == want.keys()
+    for key, expected in want.items():
+        got = last[key][1:-1] if late else last[key][1:]
+        if builder == "running_totals_per_user":
+            assert got[0] == expected[0]
+            assert got[1] == pytest.approx(expected[1], rel=1e-12), key
+        else:
+            assert got == expected, key
+        assert len(states[key]) == len(state_schema.split(","))
+    if late:
+        for key in want:
+            assert [r[-1] for batch in rows for r in batch if r[0] == key] == late, key
+        # the last field of every state is the last kept day or week
+        last_key = 20240110 if column == "event_type" else 8
+        assert {s[-1] for s in states.values()} == {last_key}
+    if state_name is None:
+        assert not hasattr(sw, builder + "_tws")
+        return
+    tws_rows, tws_states, tws_column, tws_kwargs, value_state = _drive(
+        getattr(sw, builder + "_tws")(_FakeFrame(), *args), batches
+    )
+    assert tws_column == column
+    assert tws_kwargs == {"outputStructType": schema, "outputMode": "Update", "timeMode": "None"}
+    assert value_state == (state_name, state_schema)
+    assert tws_rows == rows
+    assert tws_states == states
+
+
+def test_each_monitor_recursion_is_written_once():
+    """The monitors share one applyInPandasWithState call, one
+    transformWithStateInPandas call and one out-of-order guard."""
+    import ast
+    import inspect
+
+    tree = ast.parse(inspect.getsource(sw))
+    calls = [
+        node.func.attr
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)
+    ]
+    late_guards = [
+        node
+        for node in ast.walk(tree)
+        if isinstance(node, ast.AugAssign)
+        and isinstance(node.target, ast.Name)
+        and node.target.id == "n_late"
+        and isinstance(node.op, ast.Add)
+        and isinstance(node.value, ast.Constant)
+        and node.value.value == 1
+    ]
+    assert calls.count("applyInPandasWithState") == 1
+    assert calls.count("transformWithStateInPandas") == 1
+    assert len(late_guards) == 1
