@@ -48,6 +48,8 @@ _SHIFTS = (512, 256, 128, 64, 32, 16, 8, 4, 2, 1)
 _B = 30  # fractional bits of log2
 _SCALE = 1 << _B
 
+LN2_MICRO = 693147  # 1e6 * ln 2, half up (= ref_det_ln_q(2.0))
+
 
 def _c(dp: int) -> float:
     return math.log(2.0) * (10.0**dp) / float(_SCALE)

@@ -17,6 +17,9 @@ aggregation to a bounded domain (distinct values, calendar days,
 integer/decimal arithmetic on every value crossing the engine
 boundary (functions/exact), det-ln (functions/detmath) wherever the
 semantics are logarithmic, and a DuckDB oracle twin per query.
+
+``stats_ljung_box_daily`` lives in ``operators/daily_hypothesis.py``
+with the other daily-series queries.
 """
 
 from __future__ import annotations
@@ -802,149 +805,6 @@ def stats_logrank_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         v.alias("v"),
         (F.floor(z * F.lit(1e6) + F.lit(0.5)).cast("long") / F.lit(1e6)).alias("z_stat"),
     )
-
-
-# ---------------------------------------------------------------------------
-# 10. Ljung-Box whiteness diagnostic over the daily order-count series
-# ---------------------------------------------------------------------------
-
-LB_MAX_LAG = 7
-
-
-def _ljung_box_oracle() -> str:
-    from ..functions.exact import sql_round_big_int_ratio
-
-    lag_rows = " UNION ALL ".join(
-        f"SELECT {k} AS k, num{k} AS num FROM nums" for k in range(1, LB_MAX_LAG + 1)
-    )
-    lead_cols = ",\n             ".join(
-        f"lead(y, {k}) OVER (ORDER BY day) AS y{k}" for k in range(1, LB_MAX_LAG + 1)
-    )
-    num_cols = ",\n             ".join(
-        f"CAST(sum(y * y{k}) AS BIGINT) AS num{k}" for k in range(1, LB_MAX_LAG + 1)
-    )
-    return f"""
-    WITH daily AS (
-      SELECT CAST(o_orderdate AS DATE) AS day,
-             CAST(count(*) AS BIGINT) AS x
-      FROM orders GROUP BY 1
-    ), stat AS (
-      SELECT CAST(count(*) AS BIGINT) AS n, CAST(sum(x) AS BIGINT) AS s
-      FROM daily
-    ), y AS (
-      SELECT day, n * x - s AS y, n FROM daily, stat
-    ), yl AS (
-      SELECT y, n,
-             {lead_cols}
-      FROM y
-    ), nums AS (
-      SELECT max(n) AS n,
-             CAST(sum(y * y) AS BIGINT) AS denom,
-             {num_cols}
-      FROM yl
-    ), lags AS ({lag_rows}),
-    rho AS (
-      SELECT l.k, n.n, n.denom,
-             CAST(CASE WHEN l.num < 0
-               THEN -((2::HUGEINT * 1000000000 * (-l.num) + n.denom)
-                      // (2::HUGEINT * n.denom))
-               ELSE (2::HUGEINT * 1000000000 * l.num + n.denom)
-                      // (2::HUGEINT * n.denom) END AS BIGINT) AS rho_u
-      FROM lags l, nums n
-    ), terms AS (
-      SELECT k, n, rho_u,
-             (2 * rho_u::HUGEINT * rho_u + (n - k)) // (2::HUGEINT * (n - k))
-               AS term_u
-      FROM rho
-    ), cum AS (
-      SELECT k, n, rho_u,
-             CAST(sum(term_u) OVER (ORDER BY k) AS HUGEINT) AS cum_term
-      FROM terms
-    )
-    SELECT k AS lag, n AS n_days,
-           CAST(rho_u AS DOUBLE) / 1000000000.0 AS rho,
-           {sql_round_big_int_ratio(
-               'n::HUGEINT * (n + 2) * cum_term',
-               '1000000000000000000::HUGEINT')} AS q_ljung_box
-    FROM cum ORDER BY lag
-    """
-
-
-@register("stats_ljung_box_daily", oracle=_ljung_box_oracle())
-def stats_ljung_box_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ljung-Box portmanteau statistic over the daily order-count
-    series: autocorrelations rho_k for lags 1..7 and the cumulative
-    Q(k) = n(n+2) * sum_{j<=k} rho_j^2/(n-j) — the standard whiteness
-    diagnostic that turns the existing ACF machinery
-    (``events_acf_daily_lags``) into a single test number per lag
-    depth (large Q -> the series is not white noise; TPC-H order
-    arrivals are near-uniform so Q stays small, a fixture-verified
-    signature).
-
-    Exactness: mean-centering is integer via n-scaling (y = n*x - S),
-    so every autocovariance numerator and the variance denominator
-    are exact int64 sums; rho quantizes to 1e-9 by exact half-up
-    decimal division, the per-lag Q contribution rho_u^2/(n-k)
-    likewise, and the cumulative Q is one decimal ratio per row. The
-    ordered passes run on the calendar-day series (~2.4k rows) and
-    the 7-row lag table — never on raw orders.
-    """
-    from ..functions.exact import round_big_int_ratio
-
-    t = Tables(spark, sf_dir)
-    daily = t.orders.groupBy(F.to_date("o_orderdate").alias("day")).agg(
-        F.count(F.lit(1)).alias("x")
-    )
-    stat = daily.agg(F.count(F.lit(1)).alias("n"), F.sum("x").alias("s"))
-    y = daily.crossJoin(F.broadcast(stat)).select(
-        "day", (F.col("n") * F.col("x") - F.col("s")).alias("y"), "n"
-    )
-    w = Window.orderBy("day")
-    num_aggs = [F.max("n").alias("n"), F.sum(F.col("y") * F.col("y")).alias("denom")]
-    ycols = y.select(
-        "y", "n", *[F.lead("y", k).over(w).alias(f"y{k}") for k in range(1, LB_MAX_LAG + 1)]
-    )
-    for k in range(1, LB_MAX_LAG + 1):
-        num_aggs.append(F.sum(F.col("y") * F.col(f"y{k}")).alias(f"num{k}"))
-    nums = ycols.agg(*num_aggs)
-    lags = nums.select(
-        "n",
-        "denom",
-        F.expr(
-            "stack({}, {}) AS (k, num)".format(
-                LB_MAX_LAG,
-                ", ".join(f"{k}, num{k}" for k in range(1, LB_MAX_LAG + 1)),
-            )
-        ),
-    )
-    rho_a = F.lit(2 * 10**9).cast("decimal(38,0)") * F.abs(F.col("num")) + F.col("denom")
-    rho_b = F.lit(2).cast("decimal(38,0)") * F.col("denom")
-    rho_mag = ((rho_a - rho_a % rho_b) / rho_b).cast("long")
-    rho = lags.select(
-        "k",
-        "n",
-        F.when(F.col("num") < 0, -rho_mag).otherwise(rho_mag).alias("rho_u"),
-    )
-    t_a = F.lit(2).cast("decimal(38,0)") * F.col("rho_u") * F.col("rho_u") + (
-        F.col("n") - F.col("k")
-    )
-    t_b = F.lit(2).cast("decimal(38,0)") * (F.col("n") - F.col("k"))
-    terms = rho.select(
-        "k", "n", "rho_u", ((t_a - t_a % t_b) / t_b).cast("long").alias("term_u")
-    )
-    w_k = Window.orderBy("k").rowsBetween(Window.unboundedPreceding, 0)
-    cum = terms.select(
-        "k", "n", "rho_u", F.sum(dec38(F.col("term_u"))).over(w_k).alias("cum_term")
-    )
-    return cum.select(
-        F.col("k").alias("lag"),
-        F.col("n").alias("n_days"),
-        (F.col("rho_u").cast("double") / F.lit(1e9)).alias("rho"),
-        round_big_int_ratio(
-            dec38(F.col("n")) * (F.col("n") + 2) * F.col("cum_term"),
-            F.lit(10**18).cast("decimal(38,0)"),
-        ).alias("q_ljung_box"),
-    ).orderBy("lag")
 
 
 # ---------------------------------------------------------------------------

@@ -10,6 +10,9 @@ comparison, Tukey HSD post-hoc pairs after the ANOVA family, an n-gram
 entropy curve, the KMV theta-UNION (completing distinct /
 intersection / difference), a deterministic exponential-mechanism DP
 release, and a last-digit preference audit.
+
+``events_periodogram_fixed_periods`` lives in
+``operators/daily_spectral.py`` with the other daily-series queries.
 """
 
 from __future__ import annotations
@@ -968,130 +971,6 @@ def dq_digit_preference_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ===========================================================================
 # Queue batch B (round-10 second bank — same-commit gates)
 # ===========================================================================
-
-
-# ---------------------------------------------------------------------------
-# 9. Coarse periodogram at fixed calendar periods
-# ---------------------------------------------------------------------------
-
-# cos/sin(2*pi*i/P) quantized at 1e-3 for P in (7, 30, 91) — shared
-# integer literals in both engines (the Rayleigh-op convention; the
-# coarser 1e-3 grid keeps Sc^2 inside decimal(38) at sf1x10)
-PGRAM_PERIODS = (7, 30, 91)
-PGRAM_COSQ = {7: [1000, 623, -223, -901, -901, -223, 623], 30: [1000, 978, 914, 809, 669, 500, 309, 105, -105, -309, -500, -669, -809, -914, -978, -1000, -978, -914, -809, -669, -500, -309, -105, 105, 309, 500, 669, 809, 914, 978], 91: [1000, 998, 990, 979, 962, 941, 915, 885, 851, 813, 771, 725, 676, 623, 568, 510, 449, 387, 322, 256, 189, 121, 52, -17, -86, -155, -223, -289, -355, -418, -480, -539, -596, -650, -701, -749, -792, -833, -869, -901, -929, -952, -971, -985, -995, -999, -999, -995, -985, -971, -952, -929, -901, -869, -833, -792, -749, -701, -650, -596, -539, -480, -418, -355, -289, -223, -155, -86, -17, 52, 121, 189, 256, 322, 387, 449, 510, 568, 623, 676, 725, 771, 813, 851, 885, 915, 941, 962, 979, 990, 998]}
-PGRAM_SINQ = {7: [0, 782, 975, 434, -434, -975, -782], 30: [0, 208, 407, 588, 743, 866, 951, 995, 995, 951, 866, 743, 588, 407, 208, 0, -208, -407, -588, -743, -866, -951, -995, -995, -951, -866, -743, -588, -407, -208], 91: [0, 69, 138, 206, 273, 338, 403, 465, 525, 582, 637, 689, 737, 782, 823, 860, 893, 922, 947, 967, 982, 993, 999, 1000, 996, 988, 975, 957, 935, 908, 877, 842, 803, 760, 713, 663, 610, 554, 495, 434, 371, 306, 239, 172, 103, 35, -35, -103, -172, -239, -306, -371, -434, -495, -554, -610, -663, -713, -760, -803, -842, -877, -908, -935, -957, -975, -988, -996, -1000, -999, -993, -982, -967, -947, -922, -893, -860, -823, -782, -737, -689, -637, -582, -525, -465, -403, -338, -273, -206, -138, -69]}
-
-
-def _pgram_oracle() -> str:
-    from ..functions.exact import sql_round_big_int_ratio
-
-    per_p = []
-    for p in PGRAM_PERIODS:
-        cosl = ", ".join(str(v) for v in PGRAM_COSQ[p])
-        sinl = ", ".join(str(v) for v in PGRAM_SINQ[p])
-        per_p.append(
-            f"""
-      SELECT {p}::BIGINT AS period,
-             CAST(sum(z * ([{cosl}])[((k - 1) % {p}) + 1]) AS HUGEINT) AS sc,
-             CAST(sum(z * ([{sinl}])[((k - 1) % {p}) + 1]) AS HUGEINT) AS ss
-      FROM cent"""
-        )
-    unions = " UNION ALL ".join(per_p)
-    return f"""
-    WITH daily AS (
-      SELECT CAST(o_orderdate AS DATE) AS day, CAST(count(*) AS BIGINT) AS y
-      FROM orders GROUP BY 1
-    ), idx AS (
-      SELECT a.day, a.y, CAST(count(*) AS BIGINT) AS k
-      FROM daily a JOIN daily b ON b.day <= a.day
-      GROUP BY a.day, a.y
-    ), tot AS (
-      SELECT CAST(count(*) AS BIGINT) AS n, CAST(sum(y) AS BIGINT) AS s
-      FROM idx
-    ), cent AS (
-      SELECT i.k, t.n, (t.n * i.y - t.s) AS z FROM idx i, tot t
-    ), zz AS (
-      SELECT CAST(sum(z::HUGEINT * z) AS HUGEINT) AS zyy,
-             CAST(max(n) AS HUGEINT) AS n
-      FROM cent
-    ), vecs AS ({unions})
-    SELECT v.period, CAST(zz.n AS BIGINT) AS n_days,
-           CASE WHEN zz.zyy > 0 THEN
-             {sql_round_big_int_ratio(
-                 '2::HUGEINT * (v.sc * v.sc + v.ss * v.ss)',
-                 'zz.n * zz.zyy * 1000000')}
-           END AS variance_share
-    FROM vecs v, zz
-    """
-
-
-@register("events_periodogram_fixed_periods", _pgram_oracle())
-def events_periodogram_fixed_periods(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Coarse periodogram of the daily order-count series at fixed
-    calendar periods (weekly / monthly / quarterly): the share of
-    series variance carried by the Fourier pair at each period,
-    2*(Sc^2 + Ss^2)/(n * Szz) — the SPECTRAL member of the series
-    family (ACF sees correlation at a lag; the periodogram prices a
-    named seasonal cycle, and 'is there weekly seasonality and how
-    much' is the planner's first question).
-
-    Phases come from the day RANK mod P (house broadcast non-equi
-    rank join over the calendar-bounded aggregate), angles from
-    1e-3-quantized cos/sin integer literal tables shared verbatim by
-    both engines (the Rayleigh convention; 1e-3 keeps Sc^2 <=
-    ~1e34 at sf1x10 inside decimal(38)/HUGEINT — quantizing the
-    BASIS shifts the share by <1e-3 relative, identically on both
-    sides). Centered values z = n*y - S are exact ints; one
-    round_big_int_ratio per period.
-    """
-    from ..functions.exact import round_big_int_ratio
-
-    t = Tables(spark, sf_dir)
-    daily = t.orders.groupBy(F.to_date("o_orderdate").alias("day")).agg(
-        F.count(F.lit(1)).alias("y")
-    )
-    b0 = daily.select(F.col("day").alias("day_b"))
-    idx = (
-        daily.join(F.broadcast(b0), F.col("day_b") <= F.col("day"))
-        .groupBy("day", "y")
-        .agg(F.count(F.lit(1)).alias("k"))
-    )
-    tot = idx.agg(F.count(F.lit(1)).alias("n"), F.sum("y").alias("s"))
-    cent = idx.crossJoin(F.broadcast(tot)).select(
-        "k", "n", (F.col("n") * F.col("y") - F.col("s")).alias("z")
-    )
-    zz = cent.agg(
-        F.sum(dec38(F.col("z")) * dec38(F.col("z"))).alias("zyy"),
-        dec38(F.max("n")).alias("n"),
-    )
-    vec_frames = []
-    for p in PGRAM_PERIODS:
-        cos_arr = F.array(*[F.lit(v).cast("long") for v in PGRAM_COSQ[p]])
-        sin_arr = F.array(*[F.lit(v).cast("long") for v in PGRAM_SINQ[p]])
-        ph = ((F.col("k") - 1) % p + 1).cast("int")
-        vec_frames.append(
-            cent.agg(
-                F.lit(p).cast("long").alias("period"),
-                F.sum(dec38(F.col("z") * F.element_at(cos_arr, ph))).alias("sc"),
-                F.sum(dec38(F.col("z") * F.element_at(sin_arr, ph))).alias("ss"),
-            )
-        )
-    vecs = vec_frames[0]
-    for fr in vec_frames[1:]:
-        vecs = vecs.unionByName(fr)
-    num = F.lit(2).cast("decimal(38,0)") * (
-        F.col("sc") * F.col("sc") + F.col("ss") * F.col("ss")
-    )
-    return vecs.crossJoin(F.broadcast(zz)).select(
-        "period",
-        F.col("n").cast("long").alias("n_days"),
-        F.when(
-            F.col("zyy") > 0,
-            round_big_int_ratio(
-                num, F.col("n") * F.col("zyy") * F.lit(10**6).cast("decimal(38,0)")
-            ),
-        ).alias("variance_share"),
-    )
 
 
 # ---------------------------------------------------------------------------

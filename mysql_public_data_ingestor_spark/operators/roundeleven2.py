@@ -13,6 +13,10 @@ the engine-added §2.C families (graph analytics, warehouse statistics,
 time-series, corpus management) along the judge-suggested round-11
 axes: wavelet/PACF/Hill members of the daily-series suite, and a
 reservoir-sample audit beside the stratified/weighted samplers.
+
+``events_haar_wavelet_energy`` and ``events_pacf_durbin_levinson``
+live in ``operators/daily_spectral.py`` with the other daily-series
+queries.
 """
 
 from __future__ import annotations
@@ -23,385 +27,6 @@ from pyspark.sql import functions as F
 from ..functions.exact import dec38, halfup_div, sql_halfup_div
 from ..registry import register
 from ..tables import Tables
-
-# ---------------------------------------------------------------------------
-# shared: calendar-day index over the orders table (the house
-# broadcast non-equi self-join over the POST-AGGREGATION day table —
-# bounded by calendar days, never a data-scaled global window)
-# ---------------------------------------------------------------------------
-
-
-def _daily_cents_idx(t: Tables):
-    """Session-materialized (day, y=revenue-cents decimal, k=1-based
-    day rank) — ~2.4k rows. Round-14 optimization: same rationale and
-    mechanism as ``_daily_counts_idx`` below (multiple consumers, and
-    each plan BRANCH re-executed the calendar² band join); values
-    round-trip parquet losslessly."""
-    from ..warehouse import ensure_table, fixture_tag
-
-    tag = fixture_tag(t.spark, t.sf_dir, ("orders.parquet",))
-    return ensure_table(
-        t.spark,
-        f"events_daily_cents_idx_{tag}",
-        lambda: _daily_cents_idx_build(t).sortWithinPartitions("day"),
-    )
-
-
-def _daily_cents_idx_build(t: Tables):
-    """(day, y=revenue-cents decimal, k) — the unmaterialized build."""
-    cents = F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")
-    daily = t.orders.groupBy(F.to_date("o_orderdate").alias("day")).agg(
-        dec38(F.sum(cents)).alias("y")
-    )
-    b0 = daily.select(F.col("day").alias("day_b"))
-    return (
-        daily.join(F.broadcast(b0), F.col("day_b") <= F.col("day"))
-        .groupBy("day", "y")
-        .agg(dec38(F.count(F.lit(1))).alias("k"))
-    )
-
-
-_SQL_DAILY_CENTS_IDX = """
-    daily AS (
-      SELECT CAST(o_orderdate AS DATE) AS day,
-             CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)) AS HUGEINT) AS y
-      FROM orders GROUP BY 1
-    ), idx AS (
-      SELECT a.day, a.y, CAST(count(*) AS HUGEINT) AS k
-      FROM daily a JOIN daily b ON b.day <= a.day
-      GROUP BY a.day, a.y
-    )
-"""
-
-
-def _daily_counts_idx(t: Tables):
-    """Session-materialized (day, y=order count decimal, k) — the
-    count twin.
-
-    Round-14 optimization (guide §2.4 — remove repeated subtrees): 19
-    registered daily-series consumers build on this head, and a
-    consumer whose plan references it from k branches re-executed the
-    rank-index build (a calendar² broadcast band join over ~2.9M rows
-    at sf0.1) k times per run. The ~2.4k-row result is exactly the
-    calendar dimension a lakehouse maintains; it now materializes once
-    per (application, fixture) into the warehouse and every branch is
-    a 3-column scan. Values bit-identical: the build below is the
-    unchanged derivation; date/decimal(38,0) round-trip parquet
-    losslessly."""
-    from ..warehouse import ensure_table, fixture_tag
-
-    tag = fixture_tag(t.spark, t.sf_dir, ("orders.parquet",))
-    return ensure_table(
-        t.spark,
-        f"events_daily_idx_{tag}",
-        lambda: _daily_counts_idx_build(t).sortWithinPartitions("day"),
-    )
-
-
-def _daily_counts_idx_build(t: Tables):
-    """(day, y=order count decimal, k) — the unmaterialized build."""
-    daily = t.orders.groupBy(F.to_date("o_orderdate").alias("day")).agg(
-        dec38(F.count(F.lit(1))).alias("y")
-    )
-    b0 = daily.select(F.col("day").alias("day_b"))
-    return (
-        daily.join(F.broadcast(b0), F.col("day_b") <= F.col("day"))
-        .groupBy("day", "y")
-        .agg(dec38(F.count(F.lit(1))).alias("k"))
-    )
-
-
-_SQL_DAILY_COUNTS_IDX = """
-    daily AS (
-      SELECT CAST(o_orderdate AS DATE) AS day, CAST(count(*) AS HUGEINT) AS y
-      FROM orders GROUP BY 1
-    ), idx AS (
-      SELECT a.day, a.y, CAST(count(*) AS HUGEINT) AS k
-      FROM daily a JOIN daily b ON b.day <= a.day
-      GROUP BY a.day, a.y
-    )
-"""
-
-
-# ---------------------------------------------------------------------------
-# 3. Haar wavelet detail energy by dyadic level
-# ---------------------------------------------------------------------------
-
-HAAR_MAX_LEVELS = 16  # static explode list; runtime-filtered to floor(log2 n)
-
-
-def _haar_oracle() -> str:
-    from ..functions.exact import sql_round_big_int_ratio
-
-    hd = sql_halfup_div
-    levels = ", ".join(str(j) for j in range(1, HAAR_MAX_LEVELS + 1))
-    return f"""
-    WITH {_SQL_DAILY_CENTS_IDX}
-    , nn AS (
-      SELECT CAST(count(*) AS BIGINT) AS n,
-             CAST(length(bin(CAST(count(*) AS BIGINT))) - 1 AS BIGINT) AS lmax
-      FROM idx
-    ), lv AS (
-      SELECT j FROM (SELECT unnest([{levels}]) AS j), nn WHERE j <= nn.lmax
-    ), cells AS (
-      SELECT l.j, (i.k - 1) // (1::HUGEINT << l.j) AS blk,
-             CASE WHEN ((i.k - 1) // (1::HUGEINT << (l.j - 1))) % 2 = 0
-                  THEN i.y ELSE -i.y END AS sy
-      FROM idx i, lv l, nn
-      WHERE i.k <= (1::HUGEINT << nn.lmax)
-    ), details AS (
-      SELECT j, blk, CAST(sum(sy) AS HUGEINT) AS d
-      FROM cells GROUP BY j, blk
-    ), energy AS (
-      SELECT j, CAST(count(*) AS BIGINT) AS n_blocks,
-             CAST(sum({hd('1000000::HUGEINT * d * d', '(1::HUGEINT << j)')})
-                  AS HUGEINT) AS e
-      FROM details GROUP BY j
-    ), tot AS (SELECT CAST(sum(e) AS HUGEINT) AS te FROM energy)
-    SELECT CAST(j AS BIGINT) AS level, n_blocks,
-           CASE WHEN te > 0 THEN {sql_round_big_int_ratio('e', 'te')} END
-             AS energy_share
-    FROM energy, tot ORDER BY level
-    """
-
-
-@register("events_haar_wavelet_energy", oracle=_haar_oracle())
-def events_haar_wavelet_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Haar wavelet detail energy of daily order revenue by dyadic
-    level — the multi-resolution variance decomposition: level-j energy
-    sum_blocks (S_left - S_right)^2 / 2^j localizes variability at the
-    2^j-day scale (j=1 day-to-day noise, j=7..8 quarter-scale trend
-    shifts), complementing the single-scale members of the daily suite
-    (ACF lags, variance-ratio, Hurst R/S) with the full scale spectrum.
-    Series truncated to the leading 2^floor(log2 n) days; the exponent
-    comes from the binary-string-length idiom (length(bin(n)) - 1),
-    never float log2 — the ddsketch convention (roundten2.py:120).
-
-    Integer-exact: block detail d is a signed sum of exact revenue
-    cents; per-block energy half-up-quantizes 1e6*d^2 / 2^j identically
-    in both engines, sums per level in decimal(38,0)/HUGEINT, and
-    reports each level's SHARE of total detail energy (scale-free —
-    absolute cents-squared energy overflows int64 at the
-    value-magnitude fuzz scale, and the spectrum shape is the signal). Everything after the fact scan runs on
-    the ~2.4k-row calendar-day table: the (level x block) cell table is
-    <= n * log2(n) rows BY MECHANISM (calendar-bounded), built by one
-    explode over the static level list — no per-level rescan.
-    """
-    t = Tables(spark, sf_dir)
-    idx = _daily_cents_idx(t)
-    nn = idx.agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        (F.length(F.bin(F.count(F.lit(1)))) - 1).cast("long").alias("lmax"),
-    )
-    cells = (
-        idx.crossJoin(F.broadcast(nn))
-        .filter(
-            F.col("k")
-            <= F.expr("shiftleft(CAST(1 AS BIGINT), CAST(lmax AS INT))").cast(
-                "decimal(38,0)"
-            )
-        )
-        .select(
-            (F.col("k") - 1).cast("long").alias("k0"),
-            "y",
-            "lmax",
-            F.explode(
-                F.array(*[F.lit(j) for j in range(1, HAAR_MAX_LEVELS + 1)])
-            ).alias("j"),
-        )
-        .filter(F.col("j") <= F.col("lmax"))
-        .select(
-            "j",
-            F.expr(
-                "k0 div shiftleft(CAST(1 AS BIGINT), CAST(j AS INT))"
-            ).alias("blk"),
-            F.when(
-                F.expr(
-                    "(k0 div shiftleft(CAST(1 AS BIGINT), CAST(j AS INT) - 1)) % 2"
-                )
-                == 0,
-                F.col("y"),
-            )
-            .otherwise(-F.col("y"))
-            .alias("sy"),
-        )
-    )
-    details = cells.groupBy("j", "blk").agg(F.sum("sy").alias("d"))
-    m = F.lit(1_000_000).cast("decimal(38,0)")
-    pw = F.expr("shiftleft(CAST(1 AS BIGINT), CAST(j AS INT))").cast("decimal(38,0)")
-    energy = details.groupBy("j").agg(
-        F.count(F.lit(1)).cast("long").alias("n_blocks"),
-        F.sum(halfup_div(m * F.col("d") * F.col("d"), pw)).alias("e"),
-    )
-    from ..functions.exact import round_big_int_ratio
-
-    tot = energy.agg(F.sum("e").alias("te"))
-    return (
-        energy.crossJoin(F.broadcast(tot))
-        .select(
-            F.col("j").cast("long").alias("level"),
-            "n_blocks",
-            F.when(
-                F.col("te") > 0, round_big_int_ratio(F.col("e"), F.col("te"))
-            ).alias("energy_share"),
-        )
-        .orderBy("level")
-    )
-
-
-# ---------------------------------------------------------------------------
-# 4. Partial autocorrelation (Durbin-Levinson, lags 1-3)
-# ---------------------------------------------------------------------------
-
-PACF_M = 1_000_000
-
-
-def _pacf_oracle() -> str:
-    hd = sql_halfup_div
-    m = PACF_M
-    return f"""
-    WITH {_SQL_DAILY_COUNTS_IDX}
-    , tot AS (
-      SELECT CAST(count(*) AS HUGEINT) AS n, CAST(sum(y) AS HUGEINT) AS s
-      FROM idx
-    ), cent AS (
-      SELECT i.k, (t.n * i.y - t.s) AS x FROM idx i, tot t
-    ), cc AS (
-      SELECT
-        (SELECT CAST(sum(a.x * a.x) AS HUGEINT) FROM cent a) AS c0,
-        (SELECT CAST(sum(a.x * b.x) AS HUGEINT)
-         FROM cent a JOIN cent b ON b.k = a.k + 1) AS c1,
-        (SELECT CAST(sum(a.x * b.x) AS HUGEINT)
-         FROM cent a JOIN cent b ON b.k = a.k + 2) AS c2,
-        (SELECT CAST(sum(a.x * b.x) AS HUGEINT)
-         FROM cent a JOIN cent b ON b.k = a.k + 3) AS c3,
-        (SELECT CAST(max(n) AS BIGINT) FROM tot) AS n
-    ), rho AS (
-      SELECT n,
-             {hd(f'{m}::HUGEINT * c1', 'c0')} AS r1,
-             {hd(f'{m}::HUGEINT * c2', 'c0')} AS r2,
-             {hd(f'{m}::HUGEINT * c3', 'c0')} AS r3
-      FROM cc WHERE c0 > 0
-    ), p2 AS (
-      SELECT *, CASE WHEN {m}::HUGEINT*{m} - r1*r1 > 0 THEN
-        {hd(f'{m}::HUGEINT * ({m}::HUGEINT * r2 - r1 * r1)',
-            f'({m}::HUGEINT*{m} - r1*r1)')} END AS f22
-      FROM rho
-    ), p21 AS (
-      SELECT *, {hd(f'(r1 * ({m}::HUGEINT - f22))', f'{m}::HUGEINT')} AS f21
-      FROM p2 WHERE f22 IS NOT NULL
-    ), p3 AS (
-      SELECT *,
-        (r3 * {m}::HUGEINT * {m} - f21 * r2 * {m} - f22 * r1 * {m}) AS num3,
-        ({m}::HUGEINT*{m}*{m} - f21 * r1 * {m} - f22 * r2 * {m}) AS den3
-      FROM p21
-    )
-    SELECT n AS n_days,
-           CAST(r1 AS DOUBLE) / {m} AS rho1,
-           CAST(r2 AS DOUBLE) / {m} AS rho2,
-           CAST(r3 AS DOUBLE) / {m} AS rho3,
-           CAST(r1 AS DOUBLE) / {m} AS pacf1,
-           CAST(f22 AS DOUBLE) / {m} AS pacf2,
-           CASE WHEN den3 > 0 THEN
-             CAST({hd(f'{m}::HUGEINT * num3', 'den3')} AS DOUBLE) / {m}
-           END AS pacf3
-    FROM p3
-    """
-
-
-@register("events_pacf_durbin_levinson", oracle=_pacf_oracle())
-def events_pacf_durbin_levinson(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Partial autocorrelation of daily order counts at lags 1-3 via
-    the Durbin-Levinson recursion — the AR-order diagnostic the daily
-    suite lacked: the ACF (``events_acf_daily_lags``) says WHETHER the
-    series remembers, the PACF says at which lag the direct effect
-    stops (an AR(p) cuts off after lag p), which is the model-selection
-    question.
-
-    Exactness path: center as X_t = n*y_t - S (integers, no float
-    mean), fold c_k = sum X_t X_{{t+k}} in decimal(38,0)/HUGEINT via
-    rank equi-joins on the calendar-day table, quantize rho_k ONCE at
-    1e-6 (shared half-up idiom), then run the DL recursion entirely in
-    micro-integers: phi22 = (rho2 - rho1^2)/(1 - rho1^2), phi21 =
-    rho1(1 - phi22), phi33 = (rho3 - phi21 rho2 - phi22 rho1)/(1 -
-    phi21 rho1 - phi22 rho2) — every division half-up at 1e-6,
-    identically in both engines; the replica also pins the recursion
-    against a numpy Toeplitz solve (the §5i.11 shared-derivation rule).
-
-    Scale shape: one fact scan to the ~2.4k-row day table; lag pairing
-    is a broadcast rank equi-join; everything after is 1-row algebra.
-    """
-    t = Tables(spark, sf_dir)
-    idx = _daily_counts_idx(t)
-    tot = idx.agg(
-        dec38(F.count(F.lit(1))).alias("n"), F.sum("y").alias("s")
-    )
-    cent = idx.crossJoin(F.broadcast(tot)).select(
-        "k", (F.col("n") * F.col("y") - F.col("s")).alias("x"), "n"
-    )
-    c0 = cent.agg(F.sum(F.col("x") * F.col("x")).alias("c0"), F.max("n").alias("n"))
-    lagged = cent.select(F.col("k").alias("kb"), F.col("x").alias("xb"))
-    pairs = cent.join(
-        F.broadcast(lagged),
-        (F.col("kb") > F.col("k")) & (F.col("kb") <= F.col("k") + 3),
-    ).select((F.col("kb") - F.col("k")).cast("int").alias("lag"), (F.col("x") * F.col("xb")).alias("xx"))
-    cks = (
-        pairs.groupBy("lag")
-        .agg(F.sum("xx").alias("ck"))
-        .groupBy()
-        .pivot("lag", [1, 2, 3])
-        .agg(F.first("ck"))
-        .select(
-            F.col("1").alias("c1"), F.col("2").alias("c2"), F.col("3").alias("c3")
-        )
-    )
-    m = F.lit(PACF_M).cast("decimal(38,0)")
-    cc = c0.crossJoin(F.broadcast(cks)).filter(F.col("c0") > 0)
-    rho = cc.select(
-        F.col("n").cast("long").alias("n_days"),
-        halfup_div(m * F.col("c1"), F.col("c0")).alias("r1"),
-        halfup_div(m * F.col("c2"), F.col("c0")).alias("r2"),
-        halfup_div(m * F.col("c3"), F.col("c0")).alias("r3"),
-    )
-    p2 = rho.select(
-        "*",
-        F.when(
-            m * m - F.col("r1") * F.col("r1") > 0,
-            halfup_div(
-                m * (m * F.col("r2") - F.col("r1") * F.col("r1")),
-                m * m - F.col("r1") * F.col("r1"),
-            ),
-        ).alias("f22"),
-    ).filter(F.col("f22").isNotNull())
-    p21 = p2.select(
-        "*", halfup_div(F.col("r1") * (m - F.col("f22")), m).alias("f21")
-    )
-    p3 = p21.select(
-        "*",
-        (
-            F.col("r3") * m * m
-            - F.col("f21") * F.col("r2") * m
-            - F.col("f22") * F.col("r1") * m
-        ).alias("num3"),
-        (
-            m * m * m
-            - F.col("f21") * F.col("r1") * m
-            - F.col("f22") * F.col("r2") * m
-        ).alias("den3"),
-    )
-    md = F.lit(float(PACF_M))
-    return p3.select(
-        "n_days",
-        (F.col("r1").cast("double") / md).alias("rho1"),
-        (F.col("r2").cast("double") / md).alias("rho2"),
-        (F.col("r3").cast("double") / md).alias("rho3"),
-        (F.col("r1").cast("double") / md).alias("pacf1"),
-        (F.col("f22").cast("double") / md).alias("pacf2"),
-        F.when(
-            F.col("den3") > 0,
-            halfup_div(m * F.col("num3"), F.col("den3")).cast("double") / md,
-        ).alias("pacf3"),
-    )
 
 
 # ---------------------------------------------------------------------------

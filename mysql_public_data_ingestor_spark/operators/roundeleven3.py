@@ -10,6 +10,9 @@ the signed-squared-t convention.
 
 Reference parity note: the reference (Go ingestion pipeline) has no
 analytics; these extend SURVEY §2.C warehouse statistics.
+
+``stats_cucconi_halves`` and ``stats_seasonal_mann_kendall`` live in
+``operators/daily_hypothesis.py`` with the other daily-series queries.
 """
 
 from __future__ import annotations
@@ -20,140 +23,6 @@ from pyspark.sql import functions as F
 from ..functions.exact import dec38, halfup_div, sql_halfup_div
 from ..registry import register
 from ..tables import Tables
-from .roundeleven2 import _SQL_DAILY_CENTS_IDX, _daily_cents_idx
-
-# ---------------------------------------------------------------------------
-# 1. Cucconi joint location-scale test (first vs second calendar half)
-# ---------------------------------------------------------------------------
-
-
-def _cucconi_oracle() -> str:
-    from ..functions.exact import sql_round_big_int_ratio
-
-    return f"""
-    WITH {_SQL_DAILY_CENTS_IDX}
-    , nn AS (SELECT CAST(count(*) AS HUGEINT) AS n FROM idx),
-    lab AS (
-      SELECT i.day, i.y, i.k, CASE WHEN i.k * 2 <= t.n THEN 0 ELSE 1 END AS grp
-      FROM idx i, nn t
-    ), rk AS (
-      -- rank in the combined sample under the (value, day) total order
-      SELECT a.day, a.grp,
-             CAST(count(*) AS HUGEINT) AS r
-      FROM lab a JOIN lab b
-        ON (b.y < a.y) OR (b.y = a.y AND b.day <= a.day)
-      GROUP BY a.day, a.grp
-    ), uv AS (
-      SELECT CAST(sum(CASE WHEN grp = 1 THEN r * r ELSE 0 END) AS HUGEINT) AS u,
-             CAST(sum(CASE WHEN grp = 1
-                           THEN ((SELECT n FROM nn) + 1 - r)
-                              * ((SELECT n FROM nn) + 1 - r) ELSE 0 END)
-                  AS HUGEINT) AS v,
-             CAST(sum(CASE WHEN grp = 1 THEN 1 ELSE 0 END) AS HUGEINT) AS n2,
-             CAST(sum(CASE WHEN grp = 0 THEN 1 ELSE 0 END) AS HUGEINT) AS m1
-      FROM rk
-    ), terms AS (
-      SELECT u, v, n2, m1, (m1 + n2) AS nt,
-             (2 * (m1 + n2) + 1) * (8 * (m1 + n2) + 11) AS q,
-             2 * ((m1 + n2) * (m1 + n2) - 4)
-               - (2 * (m1 + n2) + 1) * (8 * (m1 + n2) + 11) AS p,
-             6 * u - n2 * ((m1 + n2) + 1) * (2 * (m1 + n2) + 1) AS a,
-             6 * v - n2 * ((m1 + n2) + 1) * (2 * (m1 + n2) + 1) AS b
-      FROM uv
-    )
-    SELECT CAST(nt AS BIGINT) AS n_days, CAST(m1 AS BIGINT) AS n_first,
-           CAST(n2 AS BIGINT) AS n_second,
-           CAST(u AS BIGINT) AS u_stat, CAST(v AS BIGINT) AS v_stat,
-           CASE WHEN m1 > 0 AND n2 > 0 AND q*q - p*p > 0 THEN
-             {sql_round_big_int_ratio(
-                 '5::HUGEINT * (q * (a*a + b*b) - 2 * p * a * b)',
-                 '2::HUGEINT * (q*q - p*p) * m1 * n2 * (nt + 1)')}
-           END AS cucconi_c
-    FROM terms
-    """
-
-
-@register("stats_cucconi_halves", oracle=_cucconi_oracle())
-def stats_cucconi_halves(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cucconi joint location-SCALE rank test between the first and
-    second halves of the daily-revenue calendar — the two-sample test
-    the family lacked: Mann-Whitney sees location only, Ansari-Bradley
-    scale only; Cucconi's C = (U*^2 + V*^2 - 2 rho U* V*)/(2(1-rho^2))
-    rejects when EITHER moved (and predates + outperforms the
-    better-known Lepage combination, Marozzi 2013).
-
-    Exactness: ranks come from the (value, day) lexicographic total
-    order (deterministic under ties in both engines — documented tie
-    policy, same convention as the rank tests in the family), U and V
-    are exact integer rank-square sums, and C reduces to ONE half-up
-    1e-6 ratio of exact decimal(38,0)/HUGEINT polynomials:
-    C = 5(q(A^2+B^2) - 2pAB) / (2(q^2-p^2) m n (N+1)) with
-    A = 6U - n(N+1)(2N+1), B the V twin, q = (2N+1)(8N+11),
-    p = 2(N^2-4) - q — the whole standardization algebra cleared of
-    square roots before any division happens.
-
-    Scale shape: fact scan collapses to the ~2.4k-day table; the rank
-    pass is the house bounded-domain non-equi self-join; everything
-    after is 1-row algebra.
-    """
-    from ..functions.exact import round_big_int_ratio
-
-    t = Tables(spark, sf_dir)
-    idx = _daily_cents_idx(t)
-    nn = idx.agg(F.max("k").alias("n"))
-    lab = idx.crossJoin(F.broadcast(nn)).select(
-        "day", "y", F.when(F.col("k") * 2 <= F.col("n"), 0).otherwise(1).alias("grp")
-    )
-    b = lab.select(
-        F.col("day").alias("day_b"), F.col("y").alias("y_b")
-    )
-    rk = (
-        lab.join(
-            F.broadcast(b),
-            (F.col("y_b") < F.col("y"))
-            | ((F.col("y_b") == F.col("y")) & (F.col("day_b") <= F.col("day"))),
-        )
-        .groupBy("day", "grp")
-        .agg(dec38(F.count(F.lit(1))).alias("r"))
-    )
-    tot = rk.agg(dec38(F.count(F.lit(1))).alias("nt"))
-    uv = rk.crossJoin(F.broadcast(tot)).agg(
-        F.sum(
-            F.when(F.col("grp") == 1, F.col("r") * F.col("r")).otherwise(F.lit(0))
-        ).alias("u"),
-        F.sum(
-            F.when(
-                F.col("grp") == 1,
-                (F.col("nt") + 1 - F.col("r")) * (F.col("nt") + 1 - F.col("r")),
-            ).otherwise(F.lit(0))
-        ).alias("v"),
-        F.sum(F.when(F.col("grp") == 1, 1).otherwise(0)).cast("long").alias("n2"),
-        F.sum(F.when(F.col("grp") == 0, 1).otherwise(0)).cast("long").alias("m1"),
-    )
-    nt = dec38(F.col("m1")) + F.col("n2")
-    q = (2 * nt + 1) * (8 * nt + 11)
-    p = 2 * (nt * nt - 4) - q
-    a = 6 * F.col("u") - dec38(F.col("n2")) * (nt + 1) * (2 * nt + 1)
-    bb = 6 * F.col("v") - dec38(F.col("n2")) * (nt + 1) * (2 * nt + 1)
-    return uv.select(
-        nt.cast("long").alias("n_days"),
-        F.col("m1").alias("n_first"),
-        F.col("n2").alias("n_second"),
-        F.col("u").cast("long").alias("u_stat"),
-        F.col("v").cast("long").alias("v_stat"),
-        F.when(
-            (F.col("m1") > 0) & (F.col("n2") > 0) & (q * q - p * p > 0),
-            round_big_int_ratio(
-                F.lit(5).cast("decimal(38,0)")
-                * (q * (a * a + bb * bb) - 2 * p * a * bb),
-                F.lit(2).cast("decimal(38,0)")
-                * (q * q - p * p)
-                * F.col("m1")
-                * F.col("n2")
-                * (nt + 1),
-            ),
-        ).alias("cucconi_c"),
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -322,153 +191,6 @@ def stats_blomqvist_beta(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         ).alias("blomqvist_beta"),
     )
-
-
-# ---------------------------------------------------------------------------
-# 3. Seasonal Mann-Kendall (per-ISO-weekday strata, combined z)
-# ---------------------------------------------------------------------------
-
-
-def _smk_oracle() -> str:
-    return """
-    WITH daily AS (
-      SELECT CAST(o_orderdate AS DATE) AS day,
-             CAST(isodow(CAST(o_orderdate AS DATE)) AS BIGINT) AS dow,
-             CAST(count(*) AS BIGINT) AS x
-      FROM orders GROUP BY 1, 2
-    ), ncnt AS (
-      SELECT dow, CAST(count(*) AS BIGINT) AS n FROM daily GROUP BY dow
-    ), per AS (
-      SELECT a.dow,
-             CAST(sum(CASE WHEN b.x > a.x THEN 1
-                           WHEN b.x < a.x THEN -1 ELSE 0 END) AS BIGINT) AS s_mk
-      FROM daily a JOIN daily b ON a.dow = b.dow AND a.day < b.day
-      GROUP BY a.dow
-    ), ties AS (
-      SELECT dow, CAST(coalesce(sum(t * (t - 1) * (2 * t + 5)), 0) AS BIGINT) AS tie18
-      FROM (SELECT dow, CAST(count(*) AS BIGINT) AS t FROM daily GROUP BY dow, x)
-      WHERE t > 1 GROUP BY dow
-    ), strata AS (
-      SELECT c.dow, c.n, coalesce(p.s_mk, 0) AS s_mk,
-             c.n * (c.n - 1) * (2 * c.n + 5) - coalesce(t.tie18, 0) AS v18
-      FROM ncnt c
-      LEFT JOIN per p ON p.dow = c.dow
-      LEFT JOIN ties t ON t.dow = c.dow
-    ), rows_out AS (
-      SELECT dow, n, s_mk, v18 FROM strata
-      UNION ALL
-      SELECT -1 AS dow, CAST(sum(n) AS BIGINT), CAST(sum(s_mk) AS BIGINT),
-             CAST(sum(v18) AS BIGINT)
-      FROM strata
-    )
-    SELECT dow, n AS n_days, s_mk, v18 AS var_s_x18,
-           CASE WHEN v18 > 0 THEN
-             CAST(floor((CASE WHEN s_mk > 0 THEN CAST(s_mk - 1 AS DOUBLE)
-                              WHEN s_mk < 0 THEN CAST(s_mk + 1 AS DOUBLE)
-                              ELSE 0.0::DOUBLE END)
-                        / sqrt(CAST(v18 AS DOUBLE) / 18.0::DOUBLE)
-                        * 1000000.0 + 0.5) AS BIGINT) / 1000000.0
-           END AS z_mk
-    FROM rows_out ORDER BY dow
-    """
-
-
-@register("stats_seasonal_mann_kendall", oracle=_smk_oracle())
-def stats_seasonal_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Seasonal Mann-Kendall trend test (Hirsch-Slack): the MK S
-    statistic computed WITHIN each ISO-weekday stratum of the daily
-    order-count series, then combined as S* = sum S_d, Var* = sum
-    Var_d (dow = -1 row) — the trend test that cannot be fooled by the
-    weekly cycle, which inflates plain MK's variance and masks real
-    drift (``stats_mann_kendall_daily`` is the unstratified sibling;
-    its docstring's z formula is reused verbatim per stratum and for
-    the combination, the shared-derivation rule).
-
-    Exactness: identical to the MK op — S and the tie-corrected
-    variance (x18 integer units) are exact int64 per stratum and sum
-    exactly for the combined row; the one sqrt+divide runs on exact
-    integers with the identical continuity-corrected expression in
-    both engines.
-
-    Scale shape: the pairwise pass is dow-blocked (7 independent
-    ~343-row self-joins on the post-aggregation day table, ~1/7 the
-    pairs of the unstratified test), everything bounded by calendar.
-    """
-    t = Tables(spark, sf_dir)
-    daily = t.orders.groupBy(
-        F.to_date("o_orderdate").alias("day"),
-        (F.weekday(F.to_date("o_orderdate")) + 1).cast("long").alias("dow"),
-    ).agg(F.count(F.lit(1)).cast("long").alias("x"))
-    b = daily.select(
-        F.col("dow").alias("dow_b"), F.col("day").alias("day_b"), F.col("x").alias("x_b")
-    )
-    per = (
-        daily.join(
-            F.broadcast(b),
-            (F.col("dow_b") == F.col("dow")) & (F.col("day") < F.col("day_b")),
-        )
-        .groupBy("dow")
-        .agg(
-            F.sum(
-                F.when(F.col("x_b") > F.col("x"), 1)
-                .when(F.col("x_b") < F.col("x"), -1)
-                .otherwise(0)
-            )
-            .cast("long")
-            .alias("s_mk"),
-        )
-    )
-    # n per stratum must count ALL its days (the last day sources no
-    # pair), so recount from daily, not from the pair join
-    ncnt = daily.groupBy("dow").agg(F.countDistinct("day").cast("long").alias("n"))
-    ties = (
-        daily.groupBy("dow", "x")
-        .agg(F.count(F.lit(1)).cast("long").alias("t"))
-        .filter(F.col("t") > 1)
-        .groupBy("dow")
-        .agg(
-            F.sum(F.col("t") * (F.col("t") - 1) * (2 * F.col("t") + 5))
-            .cast("long")
-            .alias("tie18")
-        )
-    )
-    strata = (
-        ncnt.join(per.select("dow", "s_mk"), "dow", "left")
-        .join(ties, "dow", "left")
-        .select(
-            "dow",
-            "n",
-            F.coalesce(F.col("s_mk"), F.lit(0)).cast("long").alias("s_mk"),
-            (
-                F.col("n") * (F.col("n") - 1) * (2 * F.col("n") + 5)
-                - F.coalesce(F.col("tie18"), F.lit(0))
-            )
-            .cast("long")
-            .alias("v18"),
-        )
-    )
-    combined = strata.agg(
-        F.lit(-1).cast("long").alias("dow"),
-        F.sum("n").cast("long").alias("n"),
-        F.sum("s_mk").cast("long").alias("s_mk"),
-        F.sum("v18").cast("long").alias("v18"),
-    )
-    rows_out = strata.unionByName(combined)
-    cc = (
-        F.when(F.col("s_mk") > 0, (F.col("s_mk") - 1).cast("double"))
-        .when(F.col("s_mk") < 0, (F.col("s_mk") + 1).cast("double"))
-        .otherwise(F.lit(0.0))
-    )
-    z = F.floor(
-        cc / F.sqrt(F.col("v18").cast("double") / F.lit(18.0)) * 1e6 + F.lit(0.5)
-    ).cast("long") / F.lit(1e6)
-    return rows_out.select(
-        "dow",
-        F.col("n").alias("n_days"),
-        "s_mk",
-        F.col("v18").alias("var_s_x18"),
-        F.when(F.col("v18") > 0, z).alias("z_mk"),
-    ).orderBy("dow")
 
 
 # ---------------------------------------------------------------------------

@@ -16,6 +16,9 @@ checked against the full 563-name registry inventory before design
 Reference parity note: the reference (Go ingestion pipeline,
 ``/root/reference/main.go``) has no analytics; these extend SURVEY
 §2.C time-series / sketches / graph / DQ / corpus management.
+
+``events_spectral_flatness_residual`` lives in
+``operators/daily_spectral.py`` with the other daily-series queries.
 """
 
 from __future__ import annotations
@@ -23,167 +26,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.detmath import LN2_MICRO
 from ..functions.exact import dec38, halfup_div, sql_halfup_div
 from ..registry import register
 from ..tables import Tables
-from .roundthirteen7 import LN2_MICRO
-
-# ---------------------------------------------------------------------------
-# 1. Wiener (log-)spectral flatness of the STL remainder
-# ---------------------------------------------------------------------------
-
-
-def _flatness_oracle() -> str:
-    from ..functions.detmath import sql_det_ln_steps
-    from .roundeleven import PGRAM_COSQ, PGRAM_PERIODS, PGRAM_SINQ
-    from .roundeleven6 import _SQL_STL_DET_CTES
-
-    per_p = []
-    for p in PGRAM_PERIODS:
-        cosl = ", ".join(str(v) for v in PGRAM_COSQ[p])
-        sinl = ", ".join(str(v) for v in PGRAM_SINQ[p])
-        per_p.append(
-            f"""
-      SELECT {p}::BIGINT AS period,
-             CAST(sum(z * ([{cosl}])[((k - 1) % {p}) + 1]) AS HUGEINT) AS sc,
-             CAST(sum(z * ([{sinl}])[((k - 1) % {p}) + 1]) AS HUGEINT) AS ss
-      FROM cent"""
-        )
-    unions = " UNION ALL ".join(per_p)
-    k = len(PGRAM_PERIODS)
-    return f"""
-    WITH {_SQL_STL_DET_CTES}
-    , rtot AS (
-      SELECT CAST(count(*) AS HUGEINT) AS m, CAST(sum(r) AS HUGEINT) AS sr
-      FROM rem0
-    ), rbar AS (
-      SELECT m, {sql_halfup_div('sr', 'm')} AS rb FROM rtot
-    ), cent AS (
-      SELECT CAST(r0.k AS BIGINT) AS k, (r0.r - rb.rb) AS z
-      FROM rem0 r0, rbar rb
-    ), vecs AS ({unions}),
-    pw AS (
-      SELECT period, (sc * sc + ss * ss) AS p,
-             CAST((sc * sc + ss * ss) AS DOUBLE) AS p_dbl
-      FROM vecs
-    ), {sql_det_ln_steps('pw', 'p_dbl', 'lnp')},
-    gm AS (
-      SELECT CAST(count(*) AS HUGEINT) AS kk,
-             CAST(sum(lnp) AS HUGEINT) AS slnp,
-             {sql_halfup_div('CAST(sum(p) AS HUGEINT)', str(k))} AS pbar,
-             CAST({sql_halfup_div('CAST(sum(p) AS HUGEINT)', str(k))}
-                  AS DOUBLE) AS pbar_dbl,
-             first(period ORDER BY p DESC, period ASC) AS dominant_period
-      FROM lnp_rel
-    ), {sql_det_ln_steps('gm', 'pbar_dbl', 'lnbar')},
-    r AS (
-      SELECT (SELECT m FROM rtot) AS m, kk, slnp, lnbar, dominant_period
-      FROM lnbar_rel
-    )
-    SELECT CAST(m AS BIGINT) AS n_resid_days,
-           CAST(kk AS BIGINT) AS n_periods,
-           CAST({sql_halfup_div('slnp', 'kk')} - lnbar AS BIGINT)
-             AS ln_flatness_micro,
-           CAST(dominant_period AS BIGINT) AS dominant_period
-    FROM r
-    """
-
-
-@register("events_spectral_flatness_residual", _flatness_oracle())
-def events_spectral_flatness_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Wiener spectral flatness (in the log domain) of the STL-lite
-    remainder over the fixed calendar periods: ln SFM = mean_p ln P_p
-    - ln mean_p P_p <= 0, where P_p = sc^2 + ss^2 is the unnormalized
-    periodogram power at period p — 0 means the residual spectrum is
-    white across the tested periods (the decomposition is done),
-    strongly negative means power still concentrates at one period
-    (the mis-specification alarm in one scalar, where
-    ``events_stl_residual_periodogram`` reports the per-period
-    shares). The dominant period rides along.
-
-    Shared derivations: the remainder is ``roundeleven6._stl_rem`` /
-    ``rem0``; the quantized trig tables are ``roundeleven.PGRAM_*``
-    verbatim (the periodogram op's own heads — one derivation each,
-    now three consumers).
-
-    Exactness: powers are exact integers (sums of z x trig-literal
-    products, squared); the geometric/arithmetic means use det-ln
-    micro-nats with ONE half-up division each, so ln SFM is integer
-    arithmetic; dominant-period argmax is deterministic (power desc,
-    period asc).
-
-    Scale shape: the STL chain is calendar-bounded; the flatness
-    algebra runs on |periods| = 3 rows. 1 row out.
-    """
-    from ..functions.detmath import det_ln_q
-    from .roundeleven import PGRAM_COSQ, PGRAM_PERIODS, PGRAM_SINQ
-    from .roundeleven6 import _stl_rem
-
-    t = Tables(spark, sf_dir)
-    rem = _stl_rem(t).select("k", "r")
-    rtot = rem.agg(dec38(F.count(F.lit(1))).alias("m"), F.sum("r").alias("sr"))
-    rbar = rtot.select("m", halfup_div(F.col("sr"), F.col("m")).alias("rb"))
-    cent = rem.crossJoin(F.broadcast(rbar)).select(
-        F.col("k").cast("long").alias("k"), (F.col("r") - F.col("rb")).alias("z"),
-        "m",
-    )
-    perexp = cent.select(
-        "k",
-        "z",
-        "m",
-        F.explode(
-            F.array(*[F.lit(p).cast("long") for p in PGRAM_PERIODS])
-        ).alias("period"),
-    )
-    cos_pick = None
-    sin_pick = None
-    for p in PGRAM_PERIODS:
-        cosv = F.array(*[F.lit(v) for v in PGRAM_COSQ[p]])
-        sinv = F.array(*[F.lit(v) for v in PGRAM_SINQ[p]])
-        ph = ((F.col("k") - 1) % p + 1).cast("int")
-        c = F.element_at(cosv, ph)
-        sn = F.element_at(sinv, ph)
-        cond = F.col("period") == p
-        cos_pick = F.when(cond, c) if cos_pick is None else cos_pick.when(cond, c)
-        sin_pick = F.when(cond, sn) if sin_pick is None else sin_pick.when(cond, sn)
-    vecs = (
-        perexp.select(
-            "period",
-            "m",
-            (F.col("z") * cos_pick.cast("decimal(38,0)")).alias("zc"),
-            (F.col("z") * sin_pick.cast("decimal(38,0)")).alias("zs"),
-        )
-        .groupBy("period")
-        .agg(F.sum("zc").alias("sc"), F.sum("zs").alias("ss"),
-             F.first("m").alias("m"))
-    )
-    pw = vecs.select(
-        "period",
-        "m",
-        (F.col("sc") * F.col("sc") + F.col("ss") * F.col("ss")).alias("p"),
-        det_ln_q(
-            (F.col("sc") * F.col("sc") + F.col("ss") * F.col("ss")).cast("double")
-        ).alias("lnp"),
-    )
-    kk = len(PGRAM_PERIODS)
-    gm = pw.agg(
-        F.count(F.lit(1)).cast("long").alias("kk"),
-        F.sum("lnp").alias("slnp"),
-        halfup_div(F.sum("p"), F.lit(kk).cast("decimal(38,0)")).alias("pbar"),
-        F.min_by(
-            "period", F.struct((-F.col("p")).alias("a"), F.col("period").alias("b"))
-        ).alias("dominant_period"),
-        F.first("m").alias("m"),
-    )
-    lnbar = det_ln_q(F.col("pbar").cast("double"))
-    return gm.select(
-        F.col("m").cast("long").alias("n_resid_days"),
-        F.col("kk").alias("n_periods"),
-        (
-            halfup_div(dec38(F.col("slnp")), dec38(F.col("kk"))).cast("long") - lnbar
-        ).alias("ln_flatness_micro"),
-        F.col("dominant_period").cast("long").alias("dominant_period"),
-    )
 
 
 # ---------------------------------------------------------------------------

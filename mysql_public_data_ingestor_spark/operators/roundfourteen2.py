@@ -15,6 +15,9 @@ checked against the full 563-name registry inventory before design
 Reference parity note: the reference (Go ingestion pipeline,
 ``/root/reference/main.go``) has no analytics; these extend SURVEY
 §2.C time-series / warehouse statistics / sketches.
+
+``events_otsu_threshold_daily`` lives in ``operators/daily_change.py``
+with the other daily-series queries.
 """
 
 from __future__ import annotations
@@ -25,114 +28,6 @@ from pyspark.sql import functions as F
 from ..functions.exact import dec38, halfup_div, sql_halfup_div
 from ..registry import register
 from ..tables import Tables
-
-# ---------------------------------------------------------------------------
-# 1. Otsu threshold on the daily-count histogram
-# ---------------------------------------------------------------------------
-
-
-def _otsu_oracle() -> str:
-    from .roundeleven2 import _SQL_DAILY_COUNTS_IDX
-
-    hd = sql_halfup_div
-    return f"""
-    WITH {_SQL_DAILY_COUNTS_IDX.strip()}
-    , vals AS (
-      SELECT CAST(y AS HUGEINT) AS v, CAST(count(*) AS HUGEINT) AS c
-      FROM idx GROUP BY y
-    ), tot AS (
-      SELECT CAST(sum(c) AS HUGEINT) AS n, CAST(sum(v * c) AS HUGEINT) AS s,
-             CAST(sum(v * v * c) AS HUGEINT) AS s2
-      FROM vals
-    ), cum AS (
-      SELECT a.v, CAST(sum(b.c) AS HUGEINT) AS n0,
-             CAST(sum(b.v * b.c) AS HUGEINT) AS s0
-      FROM vals a JOIN vals b ON b.v <= a.v
-      GROUP BY a.v
-    ), cand AS (
-      SELECT c.v, c.n0, (t.n - c.n0) AS n1,
-             {hd('1000000::HUGEINT * (c.s0 * t.n - t.s * c.n0)'
-                 ' * (c.s0 * t.n - t.s * c.n0)',
-                 'c.n0 * (t.n - c.n0) * (t.n * t.s2 - t.s * t.s)')} AS eta
-      FROM cum c, tot t
-      WHERE c.n0 > 0 AND t.n - c.n0 > 0 AND t.n * t.s2 - t.s * t.s > 0
-    ), best AS (
-      SELECT v, n0, n1, eta FROM cand
-      ORDER BY eta DESC, v ASC LIMIT 1
-    )
-    SELECT (SELECT CAST(n AS BIGINT) FROM tot) AS n_days,
-           CAST(b.v AS BIGINT) AS best_threshold,
-           CAST(b.n0 AS BIGINT) AS n_low_days,
-           CAST(b.n1 AS BIGINT) AS n_high_days,
-           CAST(b.eta AS BIGINT) AS eta_micro
-    FROM best b
-    """
-
-
-@register("events_otsu_threshold_daily", _otsu_oracle())
-def events_otsu_threshold_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Otsu's optimal threshold (Otsu 1979) on the daily order-count
-    histogram: the cut that maximizes the between-class variance
-    eta(t) = (s0 N - S n0)^2 / (n0 n1 (N S2 - S^2)) — the
-    image-binarization classic applied to load data, where it answers
-    "is the traffic bimodal, and where is the natural low/high
-    regime boundary" with a parameter-free split (the alternative to
-    hand-picking an alert threshold). eta in [0, 1] is Otsu's
-    effectiveness metric — near 0 means no bimodality and the
-    threshold is meaningless; the monitor should check eta before
-    trusting the cut.
-
-    Exactness: the candidate set is the bounded distinct-daily-count
-    value grid with exact prefix sums (broadcast self-join, the
-    cvm/ansari class); eta is ONE half-up micro division of exact
-    integer cross-products per candidate (no doubles anywhere); the
-    argmax is deterministic (eta desc, value asc). Quantization note:
-    the argmax compares MICRO-quantized etas, identical in both
-    engines by construction.
-
-    Scale shape: one fact scan partial-aggregates to the calendar-day
-    domain then to the distinct-value grid; candidate algebra is
-    grid-sized. 1 row out.
-    """
-    from .roundeleven2 import _daily_counts_idx
-
-    t = Tables(spark, sf_dir)
-    idx = _daily_counts_idx(t)
-    vals = idx.groupBy(F.col("y").alias("v")).agg(dec38(F.count(F.lit(1))).alias("c"))
-    tot = vals.agg(
-        F.sum("c").alias("n"),
-        F.sum(F.col("v") * F.col("c")).alias("s"),
-        F.sum(F.col("v") * F.col("v") * F.col("c")).alias("s2"),
-    )
-    b = vals.select(F.col("v").alias("v_b"), F.col("c").alias("c_b"))
-    cum = (
-        vals.join(F.broadcast(b), F.col("v_b") <= F.col("v"))
-        .groupBy("v")
-        .agg(
-            F.sum("c_b").alias("n0"),
-            F.sum(F.col("v_b") * F.col("c_b")).alias("s0"),
-        )
-    )
-    m6 = F.lit(1_000_000).cast("decimal(38,0)")
-    j = cum.crossJoin(F.broadcast(tot))
-    d = F.col("s0") * F.col("n") - F.col("s") * F.col("n0")
-    vt = F.col("n") * F.col("s2") - F.col("s") * F.col("s")
-    n1 = F.col("n") - F.col("n0")
-    cand = j.filter((F.col("n0") > 0) & (n1 > 0) & (vt > 0)).select(
-        "v",
-        "n0",
-        n1.alias("n1"),
-        "n",
-        halfup_div(m6 * d * d, F.col("n0") * n1 * vt).alias("eta"),
-    )
-    best = cand.orderBy(F.col("eta").desc(), F.col("v").asc()).limit(1)
-    return best.select(
-        F.col("n").cast("long").alias("n_days"),
-        F.col("v").cast("long").alias("best_threshold"),
-        F.col("n0").cast("long").alias("n_low_days"),
-        F.col("n1").cast("long").alias("n_high_days"),
-        F.col("eta").cast("long").alias("eta_micro"),
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -15,14 +15,13 @@ registry inventory before design (the SCALE §5j.7 authoring rule):
   kappa alternative).
 * ``stats_krippendorff_alpha_binary`` — Krippendorff's alpha for the
   same three raters (coincidence-matrix nominal form).
-* ``stats_jarque_bera_daily`` — Jarque-Bera normality of the daily
-  order counts from exact pivoted moment sums.
 * ``stats_newcombe_diff_ci`` — Newcombe-Wilson hybrid score CI for
   the urgent-rate difference EUROPE vs ASIA.
 * ``stats_yuen_trimmed_ttest`` — Yuen's trimmed-mean t (urgent vs
   other order prices) per nation, off the exact rank windows.
-* ``stats_chatterjee_xi_daily`` — Chatterjee's xi (2020) serial
-  dependence of the daily order-count series, ties-robust form.
+
+``stats_jarque_bera_daily`` and ``stats_chatterjee_xi_daily`` live in
+``operators/daily_hypothesis.py`` with the other daily-series queries.
 
 Reference parity note: the reference (Go ingestion pipeline,
 ``/root/reference/main.go``) has no analytics; these extend SURVEY
@@ -34,7 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.exact import dec38, halfup_div, sql_halfup_div
+from ..functions.exact import dec38
 from ..registry import register
 from ..tables import Tables
 
@@ -223,132 +222,6 @@ def stats_krippendorff_alpha_binary(spark: SparkSession, sf_dir: str) -> DataFra
             de2_num > 0,
             round_big_int_ratio(de2_num - (tt - 1) * do_num, de2_num),
         ).alias("kripp_alpha"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# 3. Jarque-Bera normality of the daily order counts
-# ---------------------------------------------------------------------------
-
-
-def _jb_oracle() -> str:
-    return """
-    WITH daily AS (
-      SELECT CAST(o_orderdate AS DATE) AS day, CAST(count(*) AS BIGINT) AS y
-      FROM orders GROUP BY 1
-    ), s1 AS (
-      SELECT CAST(count(*) AS HUGEINT) AS n, CAST(sum(y) AS HUGEINT) AS sy
-      FROM daily
-    ), piv AS (
-      SELECT n, sy,
-             (CASE WHEN sy < 0 THEN -((2*abs(sy) + n) // (2*n))
-                   ELSE ((2*sy + n) // (2*n)) END) AS m
-      FROM s1
-    ), d AS (
-      SELECT p.n, p.sy, p.m,
-             CAST(sum((y - m) * (y - m)) AS HUGEINT) AS s2,
-             CAST(sum((y - m) * (y - m) * (y - m)) AS HUGEINT) AS s3,
-             CAST(sum((y - m) * (y - m) * (y - m) * (y - m)) AS HUGEINT) AS s4
-      FROM daily, piv p
-      GROUP BY p.n, p.sy, p.m
-    ), mom AS (
-      SELECT CAST(n AS BIGINT) AS n_days,
-             CAST(n AS DOUBLE) AS nd,
-             CAST(sy - n * m AS DOUBLE) / CAST(n AS DOUBLE) AS del,
-             CAST(s2 AS DOUBLE) / CAST(n AS DOUBLE) AS r2,
-             CAST(s3 AS DOUBLE) / CAST(n AS DOUBLE) AS r3,
-             CAST(s4 AS DOUBLE) / CAST(n AS DOUBLE) AS r4
-      FROM d
-    ), cm AS (
-      SELECT n_days, nd,
-             r2 - del * del AS mu2,
-             r3 - 3.0::DOUBLE * del * r2 + 2.0::DOUBLE * del * del * del AS mu3,
-             r4 - 4.0::DOUBLE * del * r3 + 6.0::DOUBLE * del * del * r2
-                - 3.0::DOUBLE * del * del * del * del AS mu4
-      FROM mom
-    ), sk AS (
-      SELECT n_days, nd,
-             mu3 / (sqrt(mu2) * mu2) AS s,
-             mu4 / (mu2 * mu2) - 3.0::DOUBLE AS k
-      FROM cm WHERE mu2 > 0
-    )
-    SELECT n_days,
-           CAST(floor(s * 1000000.0::DOUBLE + 0.5) AS BIGINT) AS skew_micro,
-           CAST(floor(k * 1000000.0::DOUBLE + 0.5) AS BIGINT) AS ex_kurt_micro,
-           CAST(floor((nd / 6.0::DOUBLE) * (s * s + (k * k) / 4.0::DOUBLE)
-                      * 1000000.0::DOUBLE + 0.5) AS BIGINT) AS jb_micro
-    FROM sk
-    """
-
-
-@register("stats_jarque_bera_daily", oracle=_jb_oracle())
-def stats_jarque_bera_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Jarque-Bera normality test (1980) on the daily order-count
-    series: JB = n/6 * (S^2 + K^2/4) from sample skewness S and
-    excess kurtosis K. The randomness shelf
-    (runs/turning-points/Bartels) asks whether the series is
-    exchangeable; JB asks whether its MARGINAL is Gaussian — the
-    gate before any z-scored control chart or sigma-threshold
-    anomaly rule on daily volumes is trusted.
-
-    Exactness: moments pivot at the half-up integer mean m so the
-    deviation power sums (d^2, d^3, d^4) stay exact
-    HUGEINT/decimal(38,0) at any realistic scale (raw fourth powers
-    of 1e9-count days would overflow decimal38 — the Bland-Altman
-    overflow lesson applied at design time); the exact sums cast once
-    to double and the central-moment/JB assembly is the identical
-    IEEE expression on both engines, quantized once at micro.
-
-    Scale shape: one fact scan partial-aggregates to the bounded
-    calendar-day table; two scalar aggregates (pivot, then deviation
-    sums); constant-size algebra after. 1 row out.
-    """
-    t = Tables(spark, sf_dir)
-    daily = t.orders.groupBy(F.to_date("o_orderdate").alias("day")).agg(
-        F.count(F.lit(1)).cast("long").alias("y")
-    )
-    s1 = daily.agg(
-        dec38(F.count(F.lit(1))).alias("n"), F.sum(dec38(F.col("y"))).alias("sy")
-    )
-    piv = s1.select(
-        "n", "sy", halfup_div(F.col("sy"), F.col("n")).alias("m")
-    )
-    d = (
-        daily.crossJoin(F.broadcast(piv))
-        .select(
-            "n",
-            "sy",
-            "m",
-            (dec38(F.col("y")) - F.col("m")).alias("dv"),
-        )
-        .groupBy("n", "sy", "m")
-        .agg(
-            F.sum(F.col("dv") * F.col("dv")).alias("s2"),
-            F.sum(F.col("dv") * F.col("dv") * F.col("dv")).alias("s3"),
-            F.sum(F.col("dv") * F.col("dv") * F.col("dv") * F.col("dv")).alias("s4"),
-        )
-    )
-    nd = F.col("n").cast("double")
-    delta = (F.col("sy") - F.col("n") * F.col("m")).cast("double") / nd
-    r2 = F.col("s2").cast("double") / nd
-    r3 = F.col("s3").cast("double") / nd
-    r4 = F.col("s4").cast("double") / nd
-    mu2 = r2 - delta * delta
-    mu3 = r3 - F.lit(3.0) * delta * r2 + F.lit(2.0) * delta * delta * delta
-    mu4 = (
-        r4
-        - F.lit(4.0) * delta * r3
-        + F.lit(6.0) * delta * delta * r2
-        - F.lit(3.0) * delta * delta * delta * delta
-    )
-    s = mu3 / (F.sqrt(mu2) * mu2)
-    k = mu4 / (mu2 * mu2) - F.lit(3.0)
-    q6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)).cast("long")  # noqa: E731
-    return d.where(mu2 > 0).select(
-        F.col("n").cast("long").alias("n_days"),
-        q6(s).alias("skew_micro"),
-        q6(k).alias("ex_kurt_micro"),
-        q6((nd / F.lit(6.0)) * (s * s + (k * k) / F.lit(4.0))).alias("jb_micro"),
     )
 
 
@@ -694,115 +567,3 @@ def stats_yuen_trimmed_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         ).alias("yuen_t_micro"),
     ).orderBy("nation")
-
-
-# ---------------------------------------------------------------------------
-# 6. Chatterjee's xi: serial dependence of the daily order counts
-# ---------------------------------------------------------------------------
-
-
-def _xi_oracle() -> str:
-    from .roundeleven2 import _SQL_DAILY_COUNTS_IDX
-
-    hd = sql_halfup_div
-    return f"""
-    WITH {_SQL_DAILY_COUNTS_IDX.strip()}
-    , vals AS (
-      SELECT y, CAST(count(*) AS HUGEINT) AS cnt FROM idx GROUP BY y
-    ), cumv AS (
-      SELECT a.y, a.cnt,
-             CAST(coalesce(sum(b.cnt), 0) AS HUGEINT) AS cum
-      FROM vals a LEFT JOIN vals b ON b.y < a.y
-      GROUP BY a.y, a.cnt
-    ), rk AS (
-      SELECT i.k, (c.cum + c.cnt) AS r, c.cnt, c.cum
-      FROM idx i JOIN cumv c ON c.y = i.y
-    ), nn AS (
-      SELECT CAST(count(*) AS HUGEINT) AS n FROM rk
-    ), snum AS (
-      SELECT CAST(sum(abs(a.r - b.r)) AS HUGEINT) AS s
-      FROM rk a JOIN rk b ON b.k = a.k + 1
-    ), dden AS (
-      SELECT CAST(sum(c.cnt * (n.n - c.cum) * (n.n - (n.n - c.cum)))
-                  AS HUGEINT) AS dd
-      FROM cumv c, nn n
-    )
-    SELECT CAST(n.n AS BIGINT) AS n_days,
-           CAST(s.s AS BIGINT) AS sum_abs_rank_diff,
-           CASE WHEN d.dd > 0 THEN
-             CAST(1000000 - {hd('1000000::HUGEINT * n.n * s.s', '2 * d.dd')}
-                  AS BIGINT)
-           END AS xi_micro
-    FROM nn n, snum s, dden d
-    """
-
-
-@register("stats_chatterjee_xi_daily", oracle=_xi_oracle())
-def stats_chatterjee_xi_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Chatterjee's xi coefficient (Chatterjee 2020, JASA) measuring
-    how well the NEXT day's order count is a function of the day
-    index — i.e. rank-based serial dependence of the daily series,
-    in the ties-robust form xi = 1 - n * sum|r_{i+1} - r_i| /
-    (2 * sum l_i (n - l_i)) with r_i = #{y_j <= y_i} and
-    l_i = #{y_j >= y_i}. Unlike the correlation shelf
-    (Spearman/Kendall measure MONOTONE association), xi converges to
-    a measure that is 0 iff independent and 1 iff y is a measurable
-    FUNCTION of the ordering — it detects periodic and V-shaped
-    structure the rank correlations score as zero.
-
-    Exactness: ranks come off the bounded distinct-count-value grid
-    (the Bartels midrank construction, here with plain <= ranks);
-    the numerator is an exact integer sum over the +1 calendar lag
-    join; the denominator is exact off the same grid; ONE half-up
-    micro division total, with the complement taken in exact integers.
-
-    Scale shape: calendar-bounded — one fact scan partial-aggregates
-    to daily counts; one value-grid cumulative (single-partition
-    allowlist class, entry landed in this same commit), one lag
-    join, two scalar aggregates. 1 row out.
-    """
-    from pyspark.sql.window import Window
-
-    from .roundeleven2 import _daily_counts_idx
-
-    t = Tables(spark, sf_dir)
-    idx = _daily_counts_idx(t)
-    vals = idx.groupBy("y").agg(dec38(F.count(F.lit(1))).alias("cnt"))
-    wv = Window.orderBy("y").rowsBetween(Window.unboundedPreceding, -1)
-    cumv = vals.select(
-        "y",
-        "cnt",
-        F.coalesce(F.sum("cnt").over(wv), F.lit(0).cast("decimal(38,0)")).alias("cum"),
-    )
-    rk = idx.join(F.broadcast(cumv), "y").select(
-        "k", (F.col("cum") + F.col("cnt")).alias("r")
-    )
-    nn = rk.agg(dec38(F.count(F.lit(1))).alias("n"))
-    b = rk.select(F.col("k").alias("kb"), F.col("r").alias("rb"))
-    snum = rk.join(b, F.col("kb") == F.col("k") + 1).agg(
-        F.sum(F.abs(F.col("r") - F.col("rb"))).alias("s")
-    )
-    dden = cumv.crossJoin(F.broadcast(nn)).agg(
-        F.sum(
-            F.col("cnt") * (F.col("n") - F.col("cum")) * (F.col("n") - (F.col("n") - F.col("cum")))
-        ).alias("dd")
-    )
-    m6 = F.lit(1_000_000).cast("decimal(38,0)")
-    return (
-        nn.crossJoin(F.broadcast(snum))
-        .crossJoin(F.broadcast(dden))
-        .select(
-            F.col("n").cast("long").alias("n_days"),
-            F.col("s").cast("long").alias("sum_abs_rank_diff"),
-            F.when(
-                F.col("dd") > 0,
-                (
-                    F.lit(1_000_000)
-                    - halfup_div(
-                        m6 * F.col("n") * F.col("s"),
-                        F.lit(2).cast("decimal(38,0)") * F.col("dd"),
-                    )
-                ).cast("long"),
-            ).alias("xi_micro"),
-        )
-    )

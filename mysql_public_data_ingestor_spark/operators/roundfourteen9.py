@@ -13,8 +13,6 @@ design (the SCALE §5j.7 authoring rule):
 
 * ``similarity_knn_reciprocity_audit`` — share of directed cosine
   kNN edges that are mutual, over the hubness-audit hash sample.
-* ``events_recurrence_rate_daily`` — recurrence rate and
-  determinism proxy of the daily count series at the MAD radius.
 * ``stats_phi_yule_q_gates`` — phi coefficient and Yule's Q for each
   quality-gate pair (the 2x2 association shelf).
 * ``stats_bhattacharyya_hellinger_priority`` — Bhattacharyya
@@ -22,6 +20,9 @@ design (the SCALE §5j.7 authoring rule):
   discount distributions.
 * ``stats_cramers_v_bias_corrected`` — Bergsma (2013) bias-corrected
   Cramer's V for priority x status.
+
+``events_recurrence_rate_daily`` lives in
+``operators/daily_spectral.py`` with the other daily-series queries.
 
 Reference parity note: the reference (Go ingestion pipeline,
 ``/root/reference/main.go``) has no analytics; these extend SURVEY
@@ -225,147 +226,6 @@ def similarity_knn_reciprocity_audit(spark: SparkSession, sf_dir: str) -> DataFr
         halfup_div(m6 * dec38(F.col("n_nn_mutual_x2")), dec38(F.col("n_sample")))
         .cast("long")
         .alias("nn_mutual_micro"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# 3. Recurrence rate + determinism proxy of the daily counts at MAD radius
-# ---------------------------------------------------------------------------
-
-
-def _rqa_oracle() -> str:
-    from .roundeleven2 import _SQL_DAILY_COUNTS_IDX
-
-    hd = sql_halfup_div
-    return f"""
-    WITH {_SQL_DAILY_COUNTS_IDX.strip()}
-    , nn AS (
-      SELECT CAST(count(*) AS BIGINT) AS n FROM idx
-    ), vals AS (
-      SELECT y, CAST(count(*) AS BIGINT) AS cnt FROM idx GROUP BY y
-    ), cumv AS (
-      SELECT a.y, CAST(coalesce(sum(b.cnt), 0) + a.cnt AS BIGINT) AS cle
-      FROM vals a LEFT JOIN vals b ON b.y < a.y
-      GROUP BY a.y, a.cnt
-    ), med AS (
-      SELECT min(y) AS m FROM cumv, nn WHERE 2 * cle >= n
-    ), dev AS (
-      SELECT abs(i.y - med.m) AS ad FROM idx i, med
-    ), dvals AS (
-      SELECT ad, CAST(count(*) AS BIGINT) AS cnt FROM dev GROUP BY ad
-    ), dcum AS (
-      SELECT a.ad, CAST(coalesce(sum(b.cnt), 0) + a.cnt AS BIGINT) AS cle
-      FROM dvals a LEFT JOIN dvals b ON b.ad < a.ad
-      GROUP BY a.ad, a.cnt
-    ), mad AS (
-      SELECT min(ad) AS eps FROM dcum, nn WHERE 2 * cle >= n
-    ), rec AS (
-      SELECT a.k AS i, b.k AS j
-      FROM idx a JOIN idx b ON b.k > a.k, mad
-      WHERE abs(a.y - b.y) <= mad.eps
-    ), det_ AS (
-      SELECT CAST(count(*) AS BIGINT) AS n_chain
-      FROM rec r1 JOIN rec r2 ON r2.i = r1.i + 1 AND r2.j = r1.j + 1
-    ), agg AS (
-      SELECT (SELECT CAST(count(*) AS BIGINT) FROM rec) AS n_rec,
-             (SELECT n_chain FROM det_) AS n_chain,
-             (SELECT n FROM nn) AS n,
-             (SELECT eps FROM mad) AS eps
-    )
-    SELECT n AS n_days, CAST(eps AS BIGINT) AS eps_mad,
-           n_rec AS n_recurrent_pairs,
-           CAST({hd('2000000::HUGEINT * n_rec', 'n * (n - 1)')} AS BIGINT)
-             AS recurrence_rate_micro,
-           CASE WHEN n_rec > 0 THEN
-             CAST({hd('1000000::HUGEINT * n_chain', 'n_rec')} AS BIGINT)
-           END AS determinism_proxy_micro
-    FROM agg
-    """
-
-
-@register("events_recurrence_rate_daily", oracle=_rqa_oracle())
-def events_recurrence_rate_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recurrence-quantification read of the daily order-count series
-    (Webber & Zbilut 1994): the recurrence rate — the share of day
-    pairs whose counts fall within the MAD radius of each other —
-    and the determinism proxy — the share of recurrent pairs whose
-    NEXT-day pair also recurs (diagonal-line structure). White noise
-    gives DET ~ RR; a deterministic seasonal skeleton gives DET >> RR
-    — structure the ACF shelf only sees linearly.
-    The radius is the series' own median absolute deviation, so the
-    statistic is scale-free and survives fixture renormalization.
-
-    Exactness: the median and MAD come off the bounded distinct-value
-    grids as exact order statistics (2*cle >= n, integer comparisons
-    only); recurrent pairs are an exact integer-condition calendar
-    self-join; the chain count is an exact +1/+1 equi-join of the
-    pair set with itself; two half-up micro divisions total.
-
-    Scale shape: calendar-bounded — daily counts partial-aggregate
-    off the fact scan; two value-grid cumulatives (single-partition
-    allowlist class, entry landed in this same commit); the pair join
-    is bounded by the calendar squared (~2.9M pairs at 2.4k days),
-    never fact-sized. 1 row out.
-    """
-    from pyspark.sql.window import Window
-
-    from .roundeleven2 import _daily_counts_idx
-
-    t = Tables(spark, sf_dir)
-    idx = _daily_counts_idx(t).select(
-        F.col("k").cast("long").alias("k"), F.col("y").cast("long").alias("y")
-    )
-    nn = idx.agg(F.count(F.lit(1)).cast("long").alias("n"))
-    vals = idx.groupBy("y").agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-    wv = Window.orderBy("y").rowsBetween(Window.unboundedPreceding, 0)
-    cumv = vals.select("y", F.sum("cnt").over(wv).alias("cle"))
-    med = cumv.crossJoin(F.broadcast(nn)).agg(
-        F.min(F.when(2 * F.col("cle") >= F.col("n"), F.col("y"))).alias("m")
-    )
-    dev = idx.crossJoin(F.broadcast(med)).select(
-        "k", "y", F.abs(F.col("y") - F.col("m")).alias("ad")
-    )
-    dvals = dev.groupBy("ad").agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-    wd = Window.orderBy("ad").rowsBetween(Window.unboundedPreceding, 0)
-    dcum = dvals.select("ad", F.sum("cnt").over(wd).alias("cle"))
-    mad = dcum.crossJoin(F.broadcast(nn)).agg(
-        F.min(F.when(2 * F.col("cle") >= F.col("n"), F.col("ad"))).alias("eps")
-    )
-    b = idx.select(F.col("k").alias("kb"), F.col("y").alias("yb"))
-    rec = (
-        idx.crossJoin(F.broadcast(mad))
-        .join(b, F.col("kb") > F.col("k"))
-        .where(F.abs(F.col("y") - F.col("yb")) <= F.col("eps"))
-        .select(F.col("k").alias("i"), F.col("kb").alias("j"))
-        .localCheckpoint(eager=False)
-    )
-    r2 = rec.select((F.col("i") - 1).alias("i"), (F.col("j") - 1).alias("j"))
-    chain = rec.join(r2, ["i", "j"]).agg(
-        F.count(F.lit(1)).cast("long").alias("n_chain")
-    )
-    nrec = rec.agg(F.count(F.lit(1)).cast("long").alias("n_rec"))
-    m6 = F.lit(1_000_000).cast("decimal(38,0)")
-    return (
-        nn.crossJoin(F.broadcast(mad))
-        .crossJoin(F.broadcast(nrec))
-        .crossJoin(F.broadcast(chain))
-        .select(
-            F.col("n").alias("n_days"),
-            F.col("eps").alias("eps_mad"),
-            F.col("n_rec").alias("n_recurrent_pairs"),
-            halfup_div(
-                F.lit(2_000_000).cast("decimal(38,0)") * dec38(F.col("n_rec")),
-                dec38(F.col("n")) * dec38(F.col("n") - 1),
-            )
-            .cast("long")
-            .alias("recurrence_rate_micro"),
-            F.when(
-                F.col("n_rec") > 0,
-                halfup_div(m6 * dec38(F.col("n_chain")), dec38(F.col("n_rec"))).cast(
-                    "long"
-                ),
-            ).alias("determinism_proxy_micro"),
-        )
     )
 
 

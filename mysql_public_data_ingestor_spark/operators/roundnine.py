@@ -14,6 +14,9 @@ audit), and a jackknife CI on AUC.
 House discipline throughout: bounded-domain partial aggregation,
 exact integer/decimal arithmetic across the engine boundary, DuckDB
 oracle twin per query.
+
+``stats_page_hinkley_orders`` lives in ``operators/daily_change.py``
+with the other daily-series queries.
 """
 
 from __future__ import annotations
@@ -561,92 +564,6 @@ def ml_brier_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
             dec38(F.col("n")) * F.col("n"),
             9,
         ).alias("uncertainty"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# 8. Page-Hinkley drift detector over the daily order-count series
-# ---------------------------------------------------------------------------
-
-PH_DELTA_MILLI = 500  # drift allowance delta = 0.5 counts/day, in 1e-3 units
-
-
-def _page_hinkley_oracle() -> str:
-    return f"""
-    WITH daily AS (
-      SELECT CAST(o_orderdate AS DATE) AS day,
-             CAST(count(*) AS BIGINT) AS x
-      FROM orders GROUP BY 1
-    ), stat AS (
-      SELECT CAST(count(*) AS BIGINT) AS n, CAST(sum(x) AS BIGINT) AS s
-      FROM daily
-    ), m AS (
-      SELECT day, n,
-             sum(1000 * n * x - 1000 * s - {PH_DELTA_MILLI} * n)
-               OVER (ORDER BY day) AS m_t
-      FROM daily, stat
-    ), exc AS (
-      SELECT day, n, m_t,
-             m_t - min(m_t) OVER (ORDER BY day) AS ph_t
-      FROM m
-    )
-    SELECT CAST(max(n) AS BIGINT) AS n_days,
-           CAST(max(ph_t) AS BIGINT) AS ph_max_scaled,
-           CAST(max(ph_t) AS DOUBLE) / (1000.0 * max(n)) AS ph_max,
-           strftime(min(CASE WHEN ph_t = (SELECT max(ph_t) FROM exc)
-                         THEN day END), '%Y-%m-%d') AS argmax_day
-    FROM exc
-    """
-
-
-@register("stats_page_hinkley_orders", oracle=_page_hinkley_oracle())
-def stats_page_hinkley_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Page-Hinkley upward-drift detector over the daily order-count
-    series: m_t = sum_{i<=t}(x_i - mean - delta), PH_t = m_t - min m,
-    reporting the maximum excursion and its earliest date — the
-    sequential mean-shift monitor beside CUSUM
-    (``events_cusum_changepoint``, which tracks level shifts without
-    the drift allowance) and the retrospective tests (Pettitt,
-    binary segmentation). delta = 0.5/day tolerates slow drift; a
-    large PH max flags a sustained upward shift.
-
-    Exact integers end-to-end: mean-centering is n-scaled
-    (1000*n*x - 1000*S - delta_milli*n per day), so the prefix sums,
-    running minimum, and excursion are int64 in n*1e-3 count units;
-    the display value divides once. Both ordered passes run on the
-    calendar-day series (~2.4k rows), never raw orders.
-    """
-    t = Tables(spark, sf_dir)
-    daily = t.orders.groupBy(F.to_date("o_orderdate").alias("day")).agg(
-        F.count(F.lit(1)).alias("x")
-    )
-    stat = daily.agg(F.count(F.lit(1)).alias("n"), F.sum("x").alias("s"))
-    w_ord = Window.orderBy("day").rowsBetween(Window.unboundedPreceding, 0)
-    m = daily.crossJoin(F.broadcast(stat)).select(
-        "day",
-        "n",
-        F.sum(
-            F.lit(1000) * F.col("n") * F.col("x")
-            - F.lit(1000) * F.col("s")
-            - F.lit(PH_DELTA_MILLI) * F.col("n")
-        )
-        .over(w_ord)
-        .alias("m_t"),
-    )
-    exc = m.select(
-        "day", "n", (F.col("m_t") - F.min("m_t").over(w_ord)).alias("ph_t")
-    )
-    w_all = Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    ranked = exc.select(
-        "day", "n", "ph_t", F.max("ph_t").over(w_all).alias("ph_max_scaled")
-    )
-    return ranked.filter(F.col("ph_t") == F.col("ph_max_scaled")).agg(
-        F.max("n").alias("n_days"),
-        F.max("ph_max_scaled").alias("ph_max_scaled"),
-        (
-            F.max("ph_max_scaled").cast("double") / (F.lit(1000.0) * F.max("n"))
-        ).alias("ph_max"),
-        F.date_format(F.min("day"), "yyyy-MM-dd").alias("argmax_day"),
     )
 
 

@@ -14,6 +14,10 @@ boundary (ratios via round_int_ratio / round_big_int_ratio, logs via
 the det-ln fixed-point chain); global ordered passes run only over
 bounded domains (sketch summaries, calendar days, seed
 neighborhoods) — never raw fact rows.
+
+``stats_mann_kendall_daily`` and
+``events_peak_over_threshold_clusters`` live in
+``operators/daily_*.py`` with the other daily-series queries.
 """
 
 from __future__ import annotations
@@ -266,111 +270,6 @@ def events_sequential_patterns_topk(spark: SparkSession, sf_dir: str) -> DataFra
         .agg(F.count(F.lit(1)).alias("n"))
     )
     return pat.orderBy(F.col("n").desc(), "pattern").limit(SEQPAT_TOPK)
-
-
-# ---------------------------------------------------------------------------
-# 4. Mann-Kendall trend test on the daily order-count series
-# ---------------------------------------------------------------------------
-
-
-def _mann_kendall_oracle() -> str:
-    return """
-    WITH daily AS (
-      SELECT CAST(o_orderdate AS DATE) AS day,
-             CAST(count(*) AS BIGINT) AS x
-      FROM orders GROUP BY 1
-    ), s AS (
-      SELECT CAST(sum(CASE WHEN b.x > a.x THEN 1
-                           WHEN b.x < a.x THEN -1 ELSE 0 END) AS BIGINT) AS s_mk
-      FROM daily a JOIN daily b ON a.day < b.day
-    ), nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM daily),
-    ties AS (
-      SELECT CAST(coalesce(sum(t * (t - 1) * (2 * t + 5)), 0) AS BIGINT) AS tie18
-      FROM (SELECT CAST(count(*) AS BIGINT) AS t FROM daily GROUP BY x)
-      WHERE t > 1
-    ), var18 AS (
-      SELECT n, s_mk, tie18,
-             n * (n - 1) * (2 * n + 5) - tie18 AS v18
-      FROM s, nn, ties
-    )
-    SELECT n AS n_days, s_mk, v18 AS var_s_x18,
-           CASE WHEN v18 > 0 THEN
-             CAST(floor((CASE WHEN s_mk > 0 THEN CAST(s_mk - 1 AS DOUBLE)
-                              WHEN s_mk < 0 THEN CAST(s_mk + 1 AS DOUBLE)
-                              ELSE 0.0::DOUBLE END)
-                        / sqrt(CAST(v18 AS DOUBLE) / 18.0::DOUBLE)
-                        * 1000000.0 + 0.5) AS BIGINT) / 1000000.0
-           END AS z_mk
-    FROM var18
-    """
-
-
-@register("stats_mann_kendall_daily", oracle=_mann_kendall_oracle())
-def stats_mann_kendall_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mann-Kendall monotone-trend test on the daily order-count
-    series: S = sum over day pairs i<j of sign(x_j - x_i), the
-    tie-corrected variance (x18 exact integer units), and the
-    continuity-corrected normal z — the RANK trend test beside the
-    Theil-Sen slope (``stats_theil_sen_trend`` estimates the slope;
-    MK tests its existence — the pair every trend toolbox ships).
-
-    The pairwise pass joins the POST-AGGREGATION calendar-day series
-    to itself (~2.4k rows at any corpus size — the same bounded-domain
-    self-join class as Theil-Sen); the fact scan collapses to days
-    map-side first. S, the tie term, and 18*Var(S) are exact int64;
-    the single sqrt+divide runs on exact integers with an identical
-    expression chain in both engines, quantized half-up 1e-6.
-    """
-    t = Tables(spark, sf_dir)
-    daily = t.orders.groupBy(F.to_date("o_orderdate").alias("day")).agg(
-        F.count(F.lit(1)).alias("x")
-    )
-    a = daily.select(F.col("day").alias("da"), F.col("x").alias("xa"))
-    b = daily.select(F.col("day").alias("db"), F.col("x").alias("xb"))
-    s = a.join(b, F.col("da") < F.col("db")).agg(
-        F.sum(
-            F.when(F.col("xb") > F.col("xa"), 1)
-            .when(F.col("xb") < F.col("xa"), -1)
-            .otherwise(0)
-        ).alias("s_mk")
-    )
-    nn = daily.agg(F.count(F.lit(1)).alias("n"))
-    ties = (
-        daily.groupBy("x")
-        .agg(F.count(F.lit(1)).alias("t"))
-        .filter(F.col("t") > 1)
-        .agg(
-            F.coalesce(
-                F.sum(F.col("t") * (F.col("t") - 1) * (2 * F.col("t") + 5)), F.lit(0)
-            ).alias("tie18")
-        )
-    )
-    v = (
-        s.crossJoin(F.broadcast(nn))
-        .crossJoin(F.broadcast(ties))
-        .select(
-            "n",
-            "s_mk",
-            (
-                F.col("n") * (F.col("n") - 1) * (2 * F.col("n") + 5) - F.col("tie18")
-            ).alias("v18"),
-        )
-    )
-    num = (
-        F.when(F.col("s_mk") > 0, (F.col("s_mk") - 1).cast("double"))
-        .when(F.col("s_mk") < 0, (F.col("s_mk") + 1).cast("double"))
-        .otherwise(F.lit(0.0))
-    )
-    z = num / F.sqrt(F.col("v18").cast("double") / F.lit(18.0))
-    return v.select(
-        F.col("n").alias("n_days"),
-        "s_mk",
-        F.col("v18").alias("var_s_x18"),
-        F.when(
-            F.col("v18") > 0,
-            F.floor(z * F.lit(1000000.0) + F.lit(0.5)).cast("long") / F.lit(1e6),
-        ).alias("z_mk"),
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -1156,107 +1055,6 @@ def stats_gumbel_daily_max_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("s").cast("double") / nd - F.lit(GUMBEL_GAMMA) * beta_micro)
             / F.lit(1000000.0)
         ).alias("gumbel_mu"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# 12. Peak-over-threshold exceedance clusters in the daily order series
-# ---------------------------------------------------------------------------
-
-
-def _pot_oracle() -> str:
-    from ..functions.exact import sql_round_big_int_ratio
-
-    return """
-    WITH daily AS (
-      SELECT CAST(o_orderdate AS DATE) AS day,
-             CAST(count(*) AS BIGINT) AS x
-      FROM orders GROUP BY 1
-    ), tot AS (
-      SELECT CAST(count(*) AS BIGINT) AS n, CAST(sum(x) AS BIGINT) AS s
-      FROM daily
-    ), exc AS (
-      SELECT day, x FROM daily, tot WHERE 4 * n * x > 5 * s
-    ), flagged AS (
-      SELECT day, x,
-             CASE WHEN lag(day) OVER (ORDER BY day) IS NULL
-                    OR date_diff('day', lag(day) OVER (ORDER BY day), day) > 1
-                  THEN 1 ELSE 0 END AS is_new
-      FROM exc
-    ), clustered AS (
-      SELECT day, x, sum(is_new) OVER (ORDER BY day
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cid
-      FROM flagged
-    ), per AS (
-      SELECT cid, CAST(count(*) AS BIGINT) AS len FROM clustered GROUP BY cid
-    )
-    SELECT t.n AS n_days,
-           (SELECT CAST(coalesce(count(*), 0) AS BIGINT) FROM exc) AS n_exceed,
-           (SELECT CAST(coalesce(count(*), 0) AS BIGINT) FROM per) AS n_clusters,
-           (SELECT CAST(coalesce(max(len), 0) AS BIGINT) FROM per)
-             AS max_cluster_len,
-           """ + sql_round_big_int_ratio("5::HUGEINT * t.s", "4::HUGEINT * t.n") + """
-             AS threshold
-    FROM tot t
-    """
-
-
-@register("events_peak_over_threshold_clusters", oracle=_pot_oracle())
-def events_peak_over_threshold_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Peak-over-threshold exceedance clustering of the daily order
-    series at threshold 1.25x the mean daily count: how many days
-    exceed, how many CLUSTERS (runs of consecutive calendar days) the
-    exceedances form, and the longest run — the extremal-dependence
-    read (declustering is the standard first step of a POT analysis:
-    n_exceed >> n_clusters means peaks arrive in persistent episodes,
-    not independent shocks) beside the single-changepoint and drift
-    monitors.
-
-    The exceedance test is EXACT rational arithmetic (x > 1.25*mean
-    <=> 4*n*x > 5*S — no float threshold can disagree cross-engine);
-    run detection is the same lag/flag/cumsum kernel as
-    ``events_sessionization``, here over the POST-AGGREGATION
-    calendar-day series (~2.4k rows at any corpus size). The reported
-    threshold itself is one exact half-up ratio.
-    """
-    from ..functions.exact import round_big_int_ratio
-
-    t = Tables(spark, sf_dir)
-    daily = t.orders.groupBy(F.to_date("o_orderdate").alias("day")).agg(
-        F.count(F.lit(1)).alias("x")
-    )
-    tot = daily.agg(F.count(F.lit(1)).alias("n"), F.sum("x").alias("s"))
-    exc = daily.crossJoin(F.broadcast(tot)).filter(
-        4 * F.col("n") * F.col("x") > 5 * F.col("s")
-    )
-    w = Window.orderBy("day")
-    flagged = exc.select(
-        "day",
-        F.when(
-            F.lag("day").over(w).isNull()
-            | (F.datediff(F.col("day"), F.lag("day").over(w)) > 1),
-            1,
-        )
-        .otherwise(0)
-        .alias("is_new"),
-    )
-    cum = w.rowsBetween(Window.unboundedPreceding, 0)
-    clustered = flagged.select("day", F.sum("is_new").over(cum).alias("cid"))
-    per = clustered.groupBy("cid").agg(F.count(F.lit(1)).alias("len"))
-    stats = per.agg(
-        F.coalesce(F.count(F.lit(1)), F.lit(0)).alias("n_clusters"),
-        F.coalesce(F.sum("len"), F.lit(0)).alias("n_exceed"),
-        F.coalesce(F.max("len"), F.lit(0)).alias("max_cluster_len"),
-    )
-    return stats.crossJoin(F.broadcast(tot)).select(
-        F.col("n").alias("n_days"),
-        "n_exceed",
-        "n_clusters",
-        "max_cluster_len",
-        round_big_int_ratio(
-            F.lit(5).cast("decimal(38,0)") * F.col("s"),
-            F.lit(4).cast("decimal(38,0)") * F.col("n"),
-        ).alias("threshold"),
     )
 
 

@@ -18,6 +18,10 @@ boundary (ratios via round_int_ratio / round_big_int_ratio); global
 ordered passes run only over bounded domains via broadcast non-equi
 self-join cumulatives or key-partitioned windows — never an
 unpartitioned window over data-scaled rows.
+
+``events_variance_ratio_test``, ``stats_runs_up_down_daily`` and
+``stats_cusum_squares_changepoint`` live in ``operators/daily_*.py``
+with the other daily-series queries.
 """
 
 from __future__ import annotations
@@ -970,116 +974,6 @@ def dq_bloom_fpp_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# 9. Variance-ratio random-walk test on the daily order series
-# ---------------------------------------------------------------------------
-
-VR_Q = 5
-
-
-def _vr_oracle() -> str:
-    from ..functions.exact import sql_round_big_int_ratio
-
-    q = VR_Q
-    return f"""
-    WITH daily AS (
-      SELECT CAST(o_orderdate AS DATE) AS day,
-             CAST(count(*) AS BIGINT) AS x
-      FROM orders GROUP BY 1
-    ), d1 AS (
-      SELECT a.x - b.x AS d FROM daily a JOIN daily b ON b.day = a.day - 1
-    ), dq AS (
-      SELECT a.x - b.x AS s FROM daily a JOIN daily b ON b.day = a.day - {q}
-    ), m1 AS (
-      SELECT CAST(count(*) AS BIGINT) AS n1,
-             CAST(sum(d) AS BIGINT) AS sd,
-             CAST(sum(d::HUGEINT * d) AS HUGEINT) AS sdd
-      FROM d1
-    ), mq AS (
-      SELECT CAST(count(*) AS BIGINT) AS nq,
-             CAST(sum(s) AS BIGINT) AS ss,
-             CAST(sum(s::HUGEINT * s) AS HUGEINT) AS ssq
-      FROM dq
-    )
-    SELECT CAST({q} AS BIGINT) AS q, m1.n1 AS n_diff, mq.nq AS n_qdiff,
-           CASE WHEN m1.n1 > 0 AND mq.nq > 0
-                     AND m1.n1 * m1.sdd - m1.sd::HUGEINT * m1.sd > 0 THEN
-             {sql_round_big_int_ratio(
-                 'm1.n1::HUGEINT * m1.n1 * (mq.nq * mq.ssq - mq.ss::HUGEINT * mq.ss)',
-                 f'{q}::HUGEINT * mq.nq * mq.nq'
-                 ' * (m1.n1 * m1.sdd - m1.sd::HUGEINT * m1.sd)')}
-           END AS variance_ratio
-    FROM m1, mq
-    """
-
-
-@register("events_variance_ratio_test", oracle=_vr_oracle())
-def events_variance_ratio_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Lo-MacKinlay variance-ratio test on the daily order-count
-    series: VR(q) = Var(q-day change) / (q * Var(1-day change)) — 1
-    under a random walk, < 1 under mean reversion, > 1 under trend
-    persistence; the random-walk diagnostic the trend family (Mann-
-    Kendall, runs test, ACF) reads qualitatively, here as ONE exact
-    statistic.
-
-    Both difference series come from calendar equi-joins (day = day -
-    lag) on the POST-AGGREGATION daily table — no window at all, so
-    no global ordered stage exists anywhere in the plan; a calendar
-    gap simply drops that pair on BOTH engines identically. Integer
-    daily counts make both variances exact big-integer forms, and
-    VR is a single half-up big-ratio.
-    """
-    from ..functions.exact import round_big_int_ratio
-
-    q = VR_Q
-    t = Tables(spark, sf_dir)
-    daily = t.orders.groupBy(F.to_date("o_orderdate").alias("day")).agg(
-        F.count(F.lit(1)).alias("x")
-    )
-    a1 = daily.select(F.col("day").alias("day_a"), F.col("x").alias("x_a"))
-    d1 = a1.join(
-        daily.select(F.col("day").alias("day_b"), F.col("x").alias("x_b")),
-        F.col("day_b") == F.date_sub(F.col("day_a"), 1),
-    ).select((F.col("x_a") - F.col("x_b")).alias("d"))
-    dq = a1.join(
-        daily.select(F.col("day").alias("day_b"), F.col("x").alias("x_b")),
-        F.col("day_b") == F.date_sub(F.col("day_a"), q),
-    ).select((F.col("x_a") - F.col("x_b")).alias("s"))
-    m1 = d1.agg(
-        F.count(F.lit(1)).alias("n1"),
-        F.sum("d").alias("sd"),
-        F.sum(dec38(F.col("d")) * F.col("d")).alias("sdd"),
-    )
-    mq = dq.agg(
-        F.count(F.lit(1)).alias("nq"),
-        F.sum("s").alias("ss"),
-        F.sum(dec38(F.col("s")) * F.col("s")).alias("ssq"),
-    )
-    out = m1.crossJoin(F.broadcast(mq))
-    num = (
-        dec38(F.col("n1"))
-        * F.col("n1")
-        * (dec38(F.col("nq")) * F.col("ssq") - dec38(F.col("ss")) * F.col("ss"))
-    )
-    den = (
-        F.lit(q).cast("decimal(38,0)")
-        * F.col("nq")
-        * F.col("nq")
-        * (dec38(F.col("n1")) * F.col("sdd") - dec38(F.col("sd")) * F.col("sd"))
-    )
-    return out.select(
-        F.lit(q).cast("long").alias("q"),
-        F.col("n1").alias("n_diff"),
-        F.col("nq").alias("n_qdiff"),
-        F.when(
-            (F.col("n1") > 0)
-            & (F.col("nq") > 0)
-            & (dec38(F.col("n1")) * F.col("sdd") - dec38(F.col("sd")) * F.col("sd") > 0),
-            round_big_int_ratio(num, den),
-        ).alias("variance_ratio"),
-    )
-
-
-# ---------------------------------------------------------------------------
 # 10. Lorenz deciles of per-user event activity
 # ---------------------------------------------------------------------------
 
@@ -1197,112 +1091,6 @@ def events_user_activity_lorenz_deciles(spark: SparkSession, sf_dir: str) -> Dat
         F.when(
             F.col("e") > 0, round_big_int_ratio(F.col("events_cum"), F.col("e"))
         ).alias("cum_share"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# 12. Difference-sign (up/down) runs test on the daily series
-# ---------------------------------------------------------------------------
-
-
-def _updown_oracle() -> str:
-    return """
-    WITH daily AS (
-      SELECT CAST(o_orderdate AS DATE) AS day,
-             CAST(count(*) AS BIGINT) AS x
-      FROM orders GROUP BY 1
-    ), idx AS (
-      SELECT a.day, a.x, CAST(count(*) AS BIGINT) AS k
-      FROM daily a JOIN daily b ON b.day <= a.day
-      GROUP BY a.day, a.x
-    ), d AS (
-      SELECT a.k,
-             CASE WHEN a.x > b.x THEN 1 WHEN a.x < b.x THEN -1 ELSE 0 END AS sgn
-      FROM idx a JOIN idx b ON b.k = a.k - 1
-    ), pairs AS (
-      SELECT CAST(count(*) AS BIGINT) AS n_pairs,
-             CAST(sum(CASE WHEN a.sgn <> b.sgn THEN 1 ELSE 0 END) AS BIGINT)
-               AS n_changes
-      FROM d a JOIN d b ON b.k = a.k - 1
-    ), nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM d)
-    SELECT nn.n AS n_diffs, p.n_pairs, p.n_changes + 1 AS n_runs,
-           CASE WHEN 16 * nn.n - 29 > 0 THEN
-             CAST(floor(CAST(3 * (p.n_changes + 1) - (2 * nn.n - 1) AS DOUBLE)
-                        * sqrt(10.0::DOUBLE)
-                        / (sqrt(CAST(16 * nn.n - 29 AS DOUBLE))
-                           * sqrt(9.0::DOUBLE))
-                        * 1000000.0 + 0.5) AS BIGINT) / 1000000.0
-           END AS z_updown
-    FROM nn, pairs p
-    """
-
-
-@register("stats_runs_up_down_daily", oracle=_updown_oracle())
-def stats_runs_up_down_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Difference-sign (up/down) runs test on the daily order-count
-    series: count maximal runs of rising/falling days and compare to
-    the randomness expectation E[R] = (2n-1)/3, Var[R] = (16n-29)/90
-    — the SERIAL-dependence randomness test complementing
-    ``events_runs_test_daily`` (that one tests runs above/below the
-    median, i.e. LEVEL clustering; this one tests the signs of the
-    DIFFERENCES, i.e. local monotonicity — a sawtooth passes the
-    median test and fails this one).
-
-    Adjacency is by RANK in the observed day sequence (a day-index
-    from a broadcast non-equi self-join over the ~2.4k-row
-    POST-AGGREGATION calendar table — no window), so calendar gaps do
-    not silently shrink the pair set and the classical E/Var formulas
-    stay calibrated against the n actually counted. Ties (d=0) keep
-    sign 0 and count as changes against either direction, identical
-    on both engines by construction; only the final z runs in double
-    (identical expression order), quantized 1e-6.
-    """
-    t = Tables(spark, sf_dir)
-    daily = t.orders.groupBy(F.to_date("o_orderdate").alias("day")).agg(
-        F.count(F.lit(1)).alias("x")
-    )
-    b0 = daily.select(F.col("day").alias("day_b"))
-    idx = (
-        daily.join(F.broadcast(b0), F.col("day_b") <= F.col("day"))
-        .groupBy("day", "x")
-        .agg(F.count(F.lit(1)).alias("k"))
-    )
-    a = idx.select(F.col("k").alias("k_a"), F.col("x").alias("x_a"))
-    d = a.join(
-        idx.select(F.col("k").alias("k_b"), F.col("x").alias("x_b")),
-        F.col("k_b") == F.col("k_a") - 1,
-    ).select(
-        F.col("k_a").alias("k"),
-        F.when(F.col("x_a") > F.col("x_b"), 1)
-        .when(F.col("x_a") < F.col("x_b"), -1)
-        .otherwise(0)
-        .alias("sgn"),
-    )
-    d1 = d.select(F.col("k").alias("k_a"), F.col("sgn").alias("sgn_a"))
-    pairs = d1.join(
-        d.select(F.col("k").alias("k_b"), F.col("sgn").alias("sgn_b")),
-        F.col("k_b") == F.col("k_a") - 1,
-    ).agg(
-        F.count(F.lit(1)).alias("n_pairs"),
-        F.sum(F.when(F.col("sgn_a") != F.col("sgn_b"), 1).otherwise(0)).alias(
-            "n_changes"
-        ),
-    )
-    nn = d.agg(F.count(F.lit(1)).alias("n"))
-    out = nn.crossJoin(F.broadcast(pairs))
-    z = (
-        (3 * (F.col("n_changes") + 1) - (2 * F.col("n") - 1)).cast("double")
-        * F.sqrt(F.lit(10.0))
-        / (F.sqrt((16 * F.col("n") - 29).cast("double")) * F.sqrt(F.lit(9.0)))
-    )
-    return out.select(
-        F.col("n").alias("n_diffs"),
-        "n_pairs",
-        (F.col("n_changes") + 1).alias("n_runs"),
-        F.when(
-            16 * F.col("n") - 29 > 0,
-            F.floor(z * F.lit(1000000.0) + F.lit(0.5)).cast("long") / F.lit(1e6),
-        ).alias("z_updown"),
     )
 
 
@@ -1712,107 +1500,6 @@ def ml_gains_at_capacity(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         ).alias("lift"),
     )
-
-
-# ---------------------------------------------------------------------------
-# 16. CUSUM-of-squares variance changepoint on the daily series
-# ---------------------------------------------------------------------------
-
-
-def _cusumsq_oracle() -> str:
-    from ..functions.exact import sql_round_big_int_ratio
-
-    return f"""
-    WITH daily AS (
-      SELECT CAST(o_orderdate AS DATE) AS day,
-             CAST(count(*) AS BIGINT) AS x
-      FROM orders GROUP BY 1
-    ), nn AS (
-      SELECT CAST(count(*) AS BIGINT) AS n,
-             CAST(sum(x::HUGEINT * x) AS HUGEINT) AS s
-      FROM daily
-    ), idx AS (
-      SELECT a.day, CAST(count(*) AS BIGINT) AS k,
-             CAST(sum(b.x::HUGEINT * b.x) AS HUGEINT) AS sk
-      FROM daily a JOIN daily b ON b.day <= a.day
-      GROUP BY a.day
-    ), dev AS (
-      SELECT i.day, i.k, abs(nn.n::HUGEINT * i.sk - i.k::HUGEINT * nn.s) AS num,
-             nn.n, nn.s
-      FROM idx i, nn
-    ), best AS (
-      SELECT day, k, num, n, s,
-             row_number() OVER (ORDER BY num DESC, day) AS rn
-      FROM dev
-    )
-    SELECT n AS n_days, strftime(day, '%Y-%m-%d') AS change_day, k AS change_index,
-           CASE WHEN n > 0 AND s > 0 THEN
-             {sql_round_big_int_ratio('num', 'n::HUGEINT * s')}
-           END AS cusum_sq_stat
-    FROM best WHERE rn = 1
-    """
-
-
-@register("stats_cusum_squares_changepoint", oracle=_cusumsq_oracle())
-def stats_cusum_squares_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CUSUM-of-squares variance changepoint on the daily order-count
-    series: D_k = sum_{t<=k} x_t^2 / sum x_t^2 - k/n, argmax |D_k| —
-    the VARIANCE-shift detector completing the changepoint family
-    (Pettitt finds a level shift, binary segmentation a mean shift,
-    Page-Hinkley an online drift; a volatility regime change slips
-    past all three and is exactly what D_k peaks on — Brown-Durbin-
-    Evans' classic).
-
-    |D_k| maximization never divides: |n*S_k - k*S| shares one
-    denominator n*S, so the argmax is over exact integers
-    (cross-multiplied), resolved with a deterministic day tiebreak.
-    The running sum-of-squares is a broadcast non-equi self-join over
-    the ~2.4k-row POST-AGGREGATION calendar table (ljung-box class),
-    the final statistic one half-up big-ratio.
-    """
-    from ..functions.exact import round_big_int_ratio
-
-    t = Tables(spark, sf_dir)
-    daily = t.orders.groupBy(F.to_date("o_orderdate").alias("day")).agg(
-        F.count(F.lit(1)).alias("x")
-    )
-    nn = daily.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(dec38(F.col("x")) * F.col("x")).alias("s"),
-    )
-    b = daily.select(F.col("day").alias("day_b"), F.col("x").alias("x_b"))
-    idx = (
-        daily.join(F.broadcast(b), F.col("day_b") <= F.col("day"))
-        .groupBy("day")
-        .agg(
-            F.count(F.lit(1)).alias("k"),
-            F.sum(dec38(F.col("x_b")) * F.col("x_b")).alias("sk"),
-        )
-    )
-    dev = idx.crossJoin(F.broadcast(nn)).select(
-        "day",
-        "k",
-        "n",
-        "s",
-        F.abs(dec38(F.col("n")) * F.col("sk") - dec38(F.col("k")) * F.col("s")).alias(
-            "num"
-        ),
-    )
-    best = dev.agg(
-        F.max_by(
-            F.struct("day", "k", "num", "n", "s"),
-            F.struct(F.col("num"), F.expr("to_unix_timestamp(day) * -1")),
-        ).alias("b")
-    ).select(
-        F.col("b.n").alias("n_days"),
-        F.date_format(F.col("b.day"), "yyyy-MM-dd").alias("change_day"),
-        F.col("b.k").alias("change_index"),
-        F.when(
-            (F.col("b.n") > 0) & (F.col("b.s") > 0),
-            round_big_int_ratio(F.col("b.num"), dec38(F.col("b.n")) * F.col("b.s")),
-        ).alias("cusum_sq_stat"),
-    )
-    return best
 
 
 # ---------------------------------------------------------------------------

@@ -3,21 +3,20 @@ warehouse-statistics, ML-quality, time-series, text and corpus
 families (VERDICT r9 item 5 follow-through — filling the remaining
 driver-window slots under the full gate discipline).
 
-1.  ``stats_durbin_watson_daily`` — Durbin-Watson first-order residual
-    autocorrelation test on the daily-revenue OLS trend fit.
-2.  ``stats_hurst_rs_daily`` — rescaled-range (R/S) Hurst exponent of
-    the daily order-count series over a fixed block-size ladder.
-3.  ``events_ccf_types_lags`` — lagged cross-correlation between the
+1.  ``events_ccf_types_lags`` — lagged cross-correlation between the
     view and purchase daily series (signed r² at lags −7..7).
-4.  ``ml_isotonic_calibration_pav`` — closed-form isotonic (PAV)
+2.  ``ml_isotonic_calibration_pav`` — closed-form isotonic (PAV)
     calibration of the hashed classifier over a bounded score-bin
     grid via the max-min prefix-average identity.
-5.  ``ml_fairness_threshold_gaps`` — per-language selection-rate /
+3.  ``ml_fairness_threshold_gaps`` — per-language selection-rate /
     TPR / FPR gaps vs global at a fixed decision threshold.
-6.  ``text_keyword_log_odds`` — Monroe et al. informative-Dirichlet
+4.  ``text_keyword_log_odds`` — Monroe et al. informative-Dirichlet
     weighted log-odds terms separating the two largest languages.
-7.  ``corpus_truncation_loss_curve`` — token loss of chunk-and-drop
+5.  ``corpus_truncation_loss_curve`` — token loss of chunk-and-drop
     packing at a context-length ladder.
+
+``stats_durbin_watson_daily`` and ``stats_hurst_rs_daily`` live in
+``operators/daily_*.py`` with the other daily-series queries.
 
 House discipline (same as roundten2): every query is a DataFrame
 plan with a DuckDB oracle twin; exact integer/decimal arithmetic
@@ -37,316 +36,6 @@ from pyspark.sql.window import Window
 from ..functions.exact import dec38, halfup_div, sql_halfup_div
 from ..registry import register
 from ..tables import Tables
-
-
-# ---------------------------------------------------------------------------
-# 1. Durbin-Watson test on the daily-revenue trend residuals
-# ---------------------------------------------------------------------------
-
-
-def _dw_oracle() -> str:
-    from ..functions.exact import sql_round_big_int_ratio
-
-    fit_num = "(co.a + co.b * i.k)"
-    return f"""
-    WITH daily AS (
-      SELECT CAST(o_orderdate AS DATE) AS day,
-             CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT))
-                  AS HUGEINT) AS y
-      FROM orders GROUP BY 1
-    ), idx AS (
-      SELECT a.day, a.y, CAST(count(*) AS HUGEINT) AS k
-      FROM daily a JOIN daily b ON b.day <= a.day
-      GROUP BY a.day, a.y
-    ), s AS (
-      SELECT CAST(count(*) AS HUGEINT) AS n, sum(k) AS st,
-             sum(k * k) AS stt, sum(y) AS sy, sum(k * y) AS sty
-      FROM idx
-    ), co AS (
-      SELECT n, n * stt - st * st AS d,
-             sy * stt - st * sty AS a,
-             n * sty - st * sy   AS b
-      FROM s
-    ), resid AS (
-      SELECT i.k,
-             i.y - {sql_halfup_div(fit_num, 'co.d')} AS e
-      FROM idx i, co
-    ), dsum AS (
-      SELECT CAST(sum((a.e - b.e) * (a.e - b.e)) AS HUGEINT) AS sd
-      FROM resid a JOIN resid b ON b.k = a.k - 1
-    ), esum AS (
-      SELECT CAST(sum(e * e) AS HUGEINT) AS se,
-             CAST(count(*) AS BIGINT) AS n
-      FROM resid
-    )
-    SELECT esum.n AS n_days,
-           {sql_round_big_int_ratio('dsum.sd', 'esum.se')} AS dw
-    FROM dsum, esum WHERE esum.se > 0
-    """
-
-
-@register("stats_durbin_watson_daily", oracle=_dw_oracle())
-def stats_durbin_watson_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Durbin-Watson statistic DW = Σ(e_t − e_{t−1})² / Σe_t² of the
-    residuals from the exact OLS trend fit of daily order revenue on
-    the day rank — THE classical first-order serial-correlation test
-    on regression residuals, complementing the Ljung-Box (raw-series
-    portmanteau) and runs tests already in the family: DW asks
-    whether the TREND MODEL's errors are independent, not whether the
-    series itself is.
-
-    Exactness path: the OLS fit is closed-form integer algebra — with
-    D = nΣt²−(Σt)², A = ΣyΣt²−ΣtΣty, B = nΣty−ΣtΣy the fitted value
-    at rank k is (A+Bk)/D; residuals are quantized ONCE at WHOLE CENTS
-    by the shared half-up integer-division idiom (e_k = y_k −
-    halfup(A+Bk, D), decimal(38,0) vs HUGEINT twins), and both DW
-    sums then run in exact 128-bit integers with one final
-    round_big_int_ratio. Whole-cent (not micro-cent) quantization is
-    the magnitude-audit headroom choice: residuals on real data are
-    ≥ 10⁶ cents so the relative quantization error is ≤ 10⁻⁶, while
-    2·10⁶·Σe² stays ≤ ~10³⁶ even on the value-magnitude fuzz profile
-    (5·10⁹-cent days), inside decimal(38)/HUGEINT — the micro-cent
-    form overflowed exactly there.
-
-    Scale shape: the fact scan partial-aggregates to the ~2.4k-row
-    calendar-day table before anything quadratic runs; the day rank
-    comes from the house broadcast non-equi self-join over that
-    POST-AGGREGATION table (no global window), and the lag pairing is
-    a rank equi-join — the same bounded-domain pattern as
-    stats_runs_up_down_daily (roundten2) and events_acf_daily_lags.
-    """
-    from ..functions.exact import round_big_int_ratio
-
-    t = Tables(spark, sf_dir)
-    cents = F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")
-    daily = t.orders.groupBy(F.to_date("o_orderdate").alias("day")).agg(
-        dec38(F.sum(cents)).alias("y")
-    )
-    b0 = daily.select(F.col("day").alias("day_b"))
-    idx = (
-        daily.join(F.broadcast(b0), F.col("day_b") <= F.col("day"))
-        .groupBy("day", "y")
-        .agg(dec38(F.count(F.lit(1))).alias("k"))
-    )
-    s = idx.agg(
-        dec38(F.count(F.lit(1))).alias("n"),
-        F.sum("k").alias("st"),
-        F.sum(F.col("k") * F.col("k")).alias("stt"),
-        F.sum("y").alias("sy"),
-        F.sum(F.col("k") * F.col("y")).alias("sty"),
-    )
-    co = s.select(
-        "n",
-        (F.col("n") * F.col("stt") - F.col("st") * F.col("st")).alias("d"),
-        (F.col("sy") * F.col("stt") - F.col("st") * F.col("sty")).alias("a"),
-        (F.col("n") * F.col("sty") - F.col("st") * F.col("sy")).alias("b"),
-    )
-    fit_num = F.col("a") + F.col("b") * F.col("k")
-    resid = idx.crossJoin(F.broadcast(co)).select(
-        "k",
-        (F.col("y") - halfup_div(fit_num, F.col("d"))).alias("e"),
-    )
-    ra = resid.select(F.col("k").alias("k_a"), F.col("e").alias("e_a"))
-    rb = resid.select(F.col("k").alias("k_b"), F.col("e").alias("e_b"))
-    dsum = ra.join(rb, F.col("k_b") == F.col("k_a") - 1).agg(
-        F.sum(
-            (F.col("e_a") - F.col("e_b")) * (F.col("e_a") - F.col("e_b"))
-        ).alias("sd")
-    )
-    esum = resid.agg(
-        F.sum(F.col("e") * F.col("e")).alias("se"),
-        F.count(F.lit(1)).alias("n_days"),
-    )
-    return (
-        esum.crossJoin(F.broadcast(dsum))
-        .filter(F.col("se") > 0)
-        .select(
-            "n_days",
-            round_big_int_ratio(F.col("sd"), F.col("se")).alias("dw"),
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
-# 2. Rescaled-range Hurst exponent of the daily order-count series
-# ---------------------------------------------------------------------------
-
-HURST_SIZES = (50, 100, 200, 400)
-
-
-def _hurst_oracle() -> str:
-    from ..functions.detmath import sql_det_ln_steps
-    from ..functions.exact import sql_round_big_int_ratio
-
-    sizes = ", ".join(str(s) for s in HURST_SIZES)
-    return f"""
-    WITH daily AS (
-      SELECT CAST(o_orderdate AS DATE) AS day,
-             CAST(count(*) AS BIGINT) AS y
-      FROM orders GROUP BY 1
-    ), idx AS (
-      SELECT a.day, a.y, CAST(count(*) AS BIGINT) AS k
-      FROM daily a JOIN daily b ON b.day <= a.day
-      GROUP BY a.day, a.y
-    ), nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM idx),
-    sizes AS (SELECT CAST(unnest([{sizes}]) AS BIGINT) AS s),
-    rows_s AS (
-      SELECT s.s, (i.k - 1) // s.s AS blk, i.k, i.y
-      FROM idx i JOIN sizes s ON true, nn
-      WHERE (i.k - 1) // s.s < nn.n // s.s
-    ), cum AS (
-      SELECT s, blk, k, y,
-             CAST(sum(y) OVER (PARTITION BY s, blk ORDER BY k) AS BIGINT) AS c,
-             CAST(sum(y) OVER (PARTITION BY s, blk) AS BIGINT) AS t,
-             CAST(row_number() OVER (PARTITION BY s, blk ORDER BY k) AS BIGINT)
-               AS i
-      FROM rows_s
-    ), blocks AS (
-      SELECT s, blk,
-             max(s * c - i * t) - min(s * c - i * t) AS rs,
-             s * s * sum(y * y) - s * t * t AS v
-      FROM cum GROUP BY s, blk, t
-    ), ok AS (
-      SELECT s, blk, rs, v FROM blocks WHERE rs > 0 AND v > 0
-    ), {sql_det_ln_steps('ok', 'rs', 'lrs')},
-    {sql_det_ln_steps('lrs_rel', 'v', 'lv')},
-    {sql_det_ln_steps('lv_rel', 's', 'ls')},
-    per_block AS (
-      SELECT s, ls, 2 * lrs + ls - lv AS m FROM ls_rel
-    ), per_size AS (
-      SELECT s, ls, CAST(count(*) AS BIGINT) AS n_blocks,
-             {sql_halfup_div('CAST(sum(m) AS HUGEINT)',
-                              '2::HUGEINT * count(*)')} AS mq
-      FROM per_block GROUP BY s, ls
-    ), fit AS (
-      SELECT CAST(count(*) AS HUGEINT) AS p,
-             CAST(sum(ls) AS HUGEINT) AS su,
-             CAST(sum(ls::HUGEINT * ls) AS HUGEINT) AS suu,
-             CAST(sum(mq) AS HUGEINT) AS sm,
-             CAST(sum(ls::HUGEINT * mq) AS HUGEINT) AS sum_
-      FROM per_size
-    )
-    SELECT ps.s AS block_size, ps.n_blocks,
-           ps.mq / 1000000.0 AS mean_ln_rs,
-           ps.ls / 1000000.0 AS ln_size,
-           CASE WHEN f.p >= 2 AND f.p * f.suu - f.su * f.su > 0
-                THEN {sql_round_big_int_ratio(
-                    'f.p * f.sum_ - f.su * f.sm',
-                    'f.p * f.suu - f.su * f.su')}
-           END AS hurst
-    FROM per_size ps, fit f
-    """
-
-
-@register("stats_hurst_rs_daily", oracle=_hurst_oracle())
-def stats_hurst_rs_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rescaled-range (R/S) Hurst exponent of the daily order-count
-    series (Hurst 1951 / Mandelbrot-Wallis): for each block size s in
-    a fixed ladder, split the day-rank sequence into ⌊n/s⌋ full
-    blocks, compute the range R of the mean-adjusted cumulative sums
-    and the population s.d. S per block, and regress mean ln(R/S) on
-    ln(s) — slope ≈ H (0.5 = random walk, >0.5 persistent). The
-    long-memory complement to the variance-ratio test (roundten2):
-    VR(5) probes one horizon; R/S fits the whole scaling law.
-
-    Exactness: with integer block sums, s·W_i = s·C_i − i·T is exact,
-    R_s = max−min of it, and V = s²Σy² − sT² = s³S² — so
-    (R/S)² = R_s²·s/V is a ratio of int64s and ln(R/S) =
-    (2L(R_s)+L(s)−L(V))/2 in det_ln_q micro-nats, bit-identical
-    across engines (det-ln twins). Per-size means quantize via the
-    shared half-up idiom; the 4-point OLS slope is one exact
-    round_big_int_ratio. det-ln args stay < 2⁵³ through sf1×10
-    (V ≤ s³·ymax² ≈ 2.5·10¹⁵ at 6k orders/day).
-
-    Scale shape: fact scan → calendar-day aggregate (~2.4k rows) →
-    broadcast non-equi rank join (house pattern) → per-(size, block)
-    KEY-PARTITIONED cumulative windows (never SinglePartition) →
-    ≤ Σ⌊n/s⌋ ≈ 90-row block table → 4-row size table → scalar slope.
-    Degenerate blocks (R=0 or V=0, constant counts) are excluded
-    identically on both engines before the logs.
-    """
-    from ..functions.detmath import det_ln_q
-    from ..functions.exact import round_big_int_ratio
-
-    t = Tables(spark, sf_dir)
-    daily = t.orders.groupBy(F.to_date("o_orderdate").alias("day")).agg(
-        F.count(F.lit(1)).alias("y")
-    )
-    b0 = daily.select(F.col("day").alias("day_b"))
-    idx = (
-        daily.join(F.broadcast(b0), F.col("day_b") <= F.col("day"))
-        .groupBy("day", "y")
-        .agg(F.count(F.lit(1)).alias("k"))
-    )
-    nn = idx.agg(F.count(F.lit(1)).alias("n"))
-    sizes = F.explode(
-        F.array(*[F.lit(s).cast("long") for s in HURST_SIZES])
-    ).alias("s")
-    rows_s = (
-        idx.crossJoin(F.broadcast(nn))
-        .select("k", "y", "n", sizes)
-        .withColumn("blk", ((F.col("k") - 1) / F.col("s")).cast("long"))
-        .filter(F.col("blk") < (F.col("n") / F.col("s")).cast("long"))
-    )
-    wo = Window.partitionBy("s", "blk").orderBy("k")
-    wa = Window.partitionBy("s", "blk")
-    cum = rows_s.select(
-        "s",
-        "blk",
-        "y",
-        F.sum("y").over(wo.rowsBetween(Window.unboundedPreceding, 0)).alias("c"),
-        F.sum("y").over(wa).alias("t"),
-        F.row_number().over(wo).cast("long").alias("i"),
-    )
-    w_s = F.col("s") * F.col("c") - F.col("i") * F.col("t")
-    blocks = cum.groupBy("s", "blk", "t").agg(
-        (F.max(w_s) - F.min(w_s)).alias("rs"),
-        F.sum(F.col("y") * F.col("y")).alias("syy"),
-    ).select(
-        "s",
-        "blk",
-        "rs",
-        (
-            F.col("s") * F.col("s") * F.col("syy")
-            - F.col("s") * F.col("t") * F.col("t")
-        ).alias("v"),
-    )
-    ok = blocks.filter((F.col("rs") > 0) & (F.col("v") > 0))
-    per_block = ok.select(
-        "s",
-        det_ln_q(F.col("s")).alias("ls"),
-        (
-            F.lit(2) * det_ln_q(F.col("rs"))
-            + det_ln_q(F.col("s"))
-            - det_ln_q(F.col("v"))
-        ).alias("m"),
-    )
-    per_size = per_block.groupBy("s", "ls").agg(
-        F.count(F.lit(1)).alias("n_blocks"),
-        halfup_div(
-            dec38(F.sum("m")), F.lit(2).cast("decimal(38,0)") * dec38(F.count(F.lit(1)))
-        ).alias("mq"),
-    )
-    fit = per_size.agg(
-        dec38(F.count(F.lit(1))).alias("p"),
-        dec38(F.sum("ls")).alias("su"),
-        dec38(F.sum(F.col("ls") * F.col("ls"))).alias("suu"),
-        F.sum("mq").alias("sm"),
-        F.sum(dec38(F.col("ls")) * F.col("mq")).alias("sum_"),
-    )
-    den = F.col("p") * F.col("suu") - F.col("su") * F.col("su")
-    return per_size.crossJoin(F.broadcast(fit)).select(
-        F.col("s").alias("block_size"),
-        "n_blocks",
-        (F.col("mq").cast("long") / F.lit(1e6)).alias("mean_ln_rs"),
-        (F.col("ls") / F.lit(1e6)).alias("ln_size"),
-        F.when(
-            (F.col("p") >= 2) & (den > 0),
-            round_big_int_ratio(
-                F.col("p") * F.col("sum_") - F.col("su") * F.col("sm"), den
-            ),
-        ).alias("hurst"),
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -1147,186 +836,6 @@ def corpus_truncation_loss_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# 8. Chow structural-break F test on the daily-revenue trend
-# ---------------------------------------------------------------------------
-
-
-def _ols_sums_sql(rel: str, where: str, suffix: str) -> str:
-    return f"""
-      SELECT CAST(count(*) AS HUGEINT) AS n{suffix},
-             CAST(sum(k) AS HUGEINT) AS st{suffix},
-             CAST(sum(k * k) AS HUGEINT) AS stt{suffix},
-             CAST(sum(y) AS HUGEINT) AS sy{suffix},
-             CAST(sum(k * y) AS HUGEINT) AS sty{suffix}
-      FROM {rel} {where}"""
-
-
-def _chow_oracle() -> str:
-    from ..functions.exact import sql_round_big_int_ratio
-
-    return f"""
-    WITH daily AS (
-      SELECT CAST(o_orderdate AS DATE) AS day,
-             CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT))
-                  AS HUGEINT) AS y
-      FROM orders GROUP BY 1
-    ), idx AS (
-      SELECT a.day, a.y, CAST(count(*) AS HUGEINT) AS k
-      FROM daily a JOIN daily b ON b.day <= a.day
-      GROUP BY a.day, a.y
-    ), brk AS (SELECT CAST(count(*) AS HUGEINT) // 2 AS kb FROM idx),
-    sp AS ({_ols_sums_sql('idx', '', '')}),
-    s1 AS ({_ols_sums_sql('idx, brk', 'WHERE k <= kb', '1')}),
-    s2 AS ({_ols_sums_sql('idx, brk', 'WHERE k > kb', '2')}),
-    co AS (
-      SELECT n, kb,
-             n * stt - st * st AS d, sy * stt - st * sty AS a,
-             n * sty - st * sy AS b,
-             n1, n1 * stt1 - st1 * st1 AS d1, sy1 * stt1 - st1 * sty1 AS a1,
-             n1 * sty1 - st1 * sy1 AS b1,
-             n2, n2 * stt2 - st2 * st2 AS d2, sy2 * stt2 - st2 * sty2 AS a2,
-             n2 * sty2 - st2 * sy2 AS b2
-      FROM sp, s1, s2, brk
-    ), resid AS (
-      SELECT i.k, c.kb, c.n, c.n1, c.n2,
-             i.y - {sql_halfup_div('(c.a + c.b * i.k)', 'c.d')} AS ep,
-             i.y - CASE WHEN i.k <= c.kb
-                   THEN {sql_halfup_div('(c.a1 + c.b1 * i.k)', 'c.d1')}
-                   ELSE {sql_halfup_div('(c.a2 + c.b2 * i.k)', 'c.d2')} END AS eu
-      FROM idx i, co c
-      WHERE c.d > 0 AND c.d1 > 0 AND c.d2 > 0
-    ), ssr AS (
-      SELECT any_value(n) AS n, any_value(n1) AS n1, any_value(n2) AS n2,
-             CAST(sum(ep * ep) AS HUGEINT) AS ssr_p,
-             CAST(sum(eu * eu) AS HUGEINT) AS ssr_u
-      FROM resid
-    )
-    SELECT CAST(n AS BIGINT) AS n_days,
-           CAST(n1 AS BIGINT) AS n_pre, CAST(n2 AS BIGINT) AS n_post,
-           CASE WHEN ssr_u > 0 AND n > 4 THEN
-             {sql_round_big_int_ratio('(ssr_p - ssr_u) * (n - 4)',
-                                      '2::HUGEINT * ssr_u')}
-           END AS f_stat,
-           CASE WHEN ssr_p > 0 THEN
-             {sql_round_big_int_ratio('ssr_u', 'ssr_p')}
-           END AS ssr_ratio
-    FROM ssr
-    """
-
-
-@register("stats_chow_test_break", oracle=_chow_oracle())
-def stats_chow_test_break(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Chow structural-break F test at the series midpoint: does one
-    linear trend explain the daily-revenue series as well as two
-    independent trends fit on the halves? F = ((SSR_p − SSR_u)/q) /
-    (SSR_u/(n − 2q)) with q = 2 parameters per segment — the
-    model-comparison member of the changepoint family (Pettitt and
-    CUSUM detect WHERE a level shifts; Chow TESTS a maintained
-    hypothesis about a KNOWN break against the pooled fit).
-
-    Same exactness machinery as stats_durbin_watson_daily: pooled and
-    per-segment OLS coefficients in closed-form 128-bit integer
-    algebra over the rank from the house broadcast non-equi self-join,
-    residuals quantized once at whole cents by the shared half-up
-    idiom, SSRs as exact integer sums, one round_big_int_ratio each
-    for F and the SSR ratio. The segment split rides CASE on the rank
-    against the deterministic midpoint kb = n//2 — one pass computes
-    all three residual sets; degenerate segments (D = 0) empty the
-    output identically on both engines.
-    """
-    from ..functions.exact import round_big_int_ratio
-
-    t = Tables(spark, sf_dir)
-    cents = F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")
-    daily = t.orders.groupBy(F.to_date("o_orderdate").alias("day")).agg(
-        dec38(F.sum(cents)).alias("y")
-    )
-    b0 = daily.select(F.col("day").alias("day_b"))
-    idx = (
-        daily.join(F.broadcast(b0), F.col("day_b") <= F.col("day"))
-        .groupBy("day", "y")
-        .agg(dec38(F.count(F.lit(1))).alias("k"))
-    )
-    def sums(pred, sfx):
-        flt = F.when(pred, F.lit(1)).otherwise(F.lit(0)).cast("decimal(38,0)")
-        return [
-            F.sum(flt).alias(f"n{sfx}"),
-            F.sum(flt * F.col("k")).alias(f"st{sfx}"),
-            F.sum(flt * F.col("k") * F.col("k")).alias(f"stt{sfx}"),
-            F.sum(flt * F.col("y")).alias(f"sy{sfx}"),
-            F.sum(flt * F.col("k") * F.col("y")).alias(f"sty{sfx}"),
-        ]
-
-    nn = idx.agg(dec38(F.count(F.lit(1))).alias("n_tot"))
-    kb_v = (F.col("n_tot") - F.col("n_tot") % 2) / 2
-    brk = nn.select(dec38(kb_v).alias("kb"))
-    withb = idx.crossJoin(F.broadcast(brk))
-    stats = withb.agg(
-        F.max("kb").alias("kb"),
-        *sums(F.lit(True), ""),
-        *sums(F.col("k") <= F.col("kb"), "1"),
-        *sums(F.col("k") > F.col("kb"), "2"),
-    )
-
-    def co(sfx):
-        n, st, stt, sy, sty = (
-            F.col(f"n{sfx}"),
-            F.col(f"st{sfx}"),
-            F.col(f"stt{sfx}"),
-            F.col(f"sy{sfx}"),
-            F.col(f"sty{sfx}"),
-        )
-        return [
-            (n * stt - st * st).alias(f"d{sfx}"),
-            (sy * stt - st * sty).alias(f"a{sfx}"),
-            (n * sty - st * sy).alias(f"b{sfx}"),
-        ]
-
-    cos = stats.select(
-        "kb", F.col("n").alias("n"), F.col("n1").alias("nn1"),
-        F.col("n2").alias("nn2"), *co(""), *co("1"), *co("2")
-    )
-    j = idx.crossJoin(F.broadcast(cos)).filter(
-        (F.col("d") > 0) & (F.col("d1") > 0) & (F.col("d2") > 0)
-    )
-    ep = F.col("y") - halfup_div(
-        F.col("a") + F.col("b") * F.col("k"), F.col("d")
-    )
-    eu = F.col("y") - F.when(
-        F.col("k") <= F.col("kb"),
-        halfup_div(F.col("a1") + F.col("b1") * F.col("k"), F.col("d1")),
-    ).otherwise(
-        halfup_div(F.col("a2") + F.col("b2") * F.col("k"), F.col("d2"))
-    )
-    ssr = j.select(
-        "n", "nn1", "nn2", ep.alias("ep"), eu.alias("eu")
-    ).agg(
-        F.max("n").alias("n"),
-        F.max("nn1").alias("n1"),
-        F.max("nn2").alias("n2"),
-        F.sum(F.col("ep") * F.col("ep")).alias("ssr_p"),
-        F.sum(F.col("eu") * F.col("eu")).alias("ssr_u"),
-    )
-    return ssr.select(
-        F.col("n").cast("long").alias("n_days"),
-        F.col("n1").cast("long").alias("n_pre"),
-        F.col("n2").cast("long").alias("n_post"),
-        F.when(
-            (F.col("ssr_u") > 0) & (F.col("n") > 4),
-            round_big_int_ratio(
-                (F.col("ssr_p") - F.col("ssr_u"))
-                * (F.col("n") - F.lit(4).cast("decimal(38,0)")),
-                F.lit(2).cast("decimal(38,0)") * F.col("ssr_u"),
-            ),
-        ).alias("f_stat"),
-        F.when(
-            F.col("ssr_p") > 0,
-            round_big_int_ratio(F.col("ssr_u"), F.col("ssr_p")),
-        ).alias("ssr_ratio"),
-    )
-
-
-# ---------------------------------------------------------------------------
 # 9. G-test of independence (day-of-week x event type)
 # ---------------------------------------------------------------------------
 
@@ -1604,96 +1113,6 @@ def privacy_qi_entropy_risk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# 12. Shewhart c-chart violations of the daily order-count series
-# ---------------------------------------------------------------------------
-
-CCHART_TOPK = 10
-
-
-def _cchart_oracle() -> str:
-    from ..functions.exact import sql_round_big_int_ratio, sql_round_int_ratio
-
-    return f"""
-    WITH daily AS (
-      SELECT CAST(o_orderdate AS DATE) AS day, CAST(count(*) AS BIGINT) AS c
-      FROM orders GROUP BY 1
-    ), tot AS (
-      SELECT CAST(count(*) AS BIGINT) AS n, CAST(sum(c) AS BIGINT) AS s
-      FROM daily
-    ), scored AS (
-      SELECT d.day, d.c, t.n, t.s,
-             (t.n * d.c - t.s) * (t.n * d.c - t.s) AS dev2,
-             CASE WHEN t.n * d.c > t.s THEN 1 ELSE -1 END AS side
-      FROM daily d, tot t
-    ), viol AS (
-      SELECT * FROM scored WHERE dev2 > 9 * s * n
-    ), nv AS (SELECT CAST(count(*) AS BIGINT) AS n_violations FROM viol)
-    SELECT CAST(v.day AS TIMESTAMP) AS day, v.c AS day_count, v.side,
-           nv.n_violations,
-           {sql_round_int_ratio('v.s', 'v.n')} AS mean_daily,
-           {sql_round_big_int_ratio('v.dev2', '9 * v.s * v.n')} AS z2_over_9
-    FROM viol v, nv
-    ORDER BY v.dev2 DESC, v.day
-    LIMIT {CCHART_TOPK}
-    """
-
-
-@register("dq_control_chart_daily", oracle=_cchart_oracle())
-def dq_control_chart_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shewhart c-chart over the daily order-count series: flag days
-    outside the Poisson 3-sigma control limits c_bar ± 3·√c_bar — the
-    process-control member of the DQ family (the weekday-anomaly
-    audit compares to same-weekday peers; this tests GLOBAL process
-    stability with the classical count-chart limits).
-
-    The sigma test is exact cross-multiplied integers — |c − S/N| >
-    3√(S/N) squares to (Nc − S)² > 9SN, no square root anywhere; the
-    reported z²/9 (how far past the limit) and the mean are single
-    round_*_int_ratio quantities. Top-10 violations by squared
-    deviation (day tie-break) via TakeOrderedAndProject; row counts
-    match on both engines because the predicate is identical integer
-    arithmetic. Fact scan partial-aggregates to the ~2.4k-day
-    calendar table; everything after is bounded.
-    """
-    from ..functions.exact import round_big_int_ratio, round_int_ratio
-
-    t = Tables(spark, sf_dir)
-    daily = t.orders.groupBy(F.to_date("o_orderdate").alias("day")).agg(
-        F.count(F.lit(1)).alias("c")
-    )
-    tot = daily.agg(F.count(F.lit(1)).alias("n"), F.sum("c").alias("s"))
-    dev = F.col("n") * F.col("c") - F.col("s")
-    scored = daily.crossJoin(F.broadcast(tot)).select(
-        "day",
-        "c",
-        "n",
-        "s",
-        (dec38(dev) * dec38(dev)).alias("dev2"),
-        F.when(dev > 0, F.lit(1)).otherwise(F.lit(-1)).alias("side"),
-    )
-    viol = scored.filter(
-        F.col("dev2") > F.lit(9).cast("decimal(38,0)") * dec38(F.col("s")) * dec38(F.col("n"))
-    )
-    nv = viol.agg(F.count(F.lit(1)).alias("n_violations"))
-    return (
-        viol.crossJoin(F.broadcast(nv))
-        .orderBy(F.col("dev2").desc(), F.col("day").asc())
-        .limit(CCHART_TOPK)
-        .select(
-            F.col("day").cast("timestamp").alias("day"),
-            F.col("c").alias("day_count"),
-            "side",
-            "n_violations",
-            round_int_ratio(F.col("s"), F.col("n")).alias("mean_daily"),
-            round_big_int_ratio(
-                F.col("dev2"),
-                F.lit(9).cast("decimal(38,0)") * dec38(F.col("s")) * dec38(F.col("n")),
-            ).alias("z2_over_9"),
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
 # 13. Rayleigh test of hour-of-day uniformity per event type
 # ---------------------------------------------------------------------------
 
@@ -1786,133 +1205,6 @@ def stats_rayleigh_hour_uniformity(spark: SparkSession, sf_dir: str) -> DataFram
         round_big_int_ratio(
             num, dec38(F.col("n")) * dec38(F.col("n")) * scale
         ).alias("rbar_sq"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# 14. Interrupted-time-series segmented regression on daily activity
-# ---------------------------------------------------------------------------
-
-
-def _its_oracle() -> str:
-    from ..functions.exact import sql_round_big_int_ratio
-
-    return f"""
-    WITH daily AS (
-      SELECT CAST(ts AS DATE) AS day, CAST(count(*) AS BIGINT) AS y
-      FROM events GROUP BY 1
-    ), idx AS (
-      SELECT a.day, a.y, CAST(count(*) AS HUGEINT) AS k
-      FROM daily a JOIN daily b ON b.day <= a.day
-      GROUP BY a.day, a.y
-    ), brk AS (SELECT CAST(count(*) AS HUGEINT) // 2 AS kb FROM idx),
-    s1 AS ({_ols_sums_sql('idx, brk', 'WHERE k <= kb', '1')}),
-    s2 AS ({_ols_sums_sql('idx, brk', 'WHERE k > kb', '2')}),
-    co AS (
-      SELECT kb, n1, n2,
-             n1 * stt1 - st1 * st1 AS d1, sy1 * stt1 - st1 * sty1 AS a1,
-             n1 * sty1 - st1 * sy1 AS b1,
-             n2 * stt2 - st2 * st2 AS d2, sy2 * stt2 - st2 * sty2 AS a2,
-             n2 * sty2 - st2 * sy2 AS b2
-      FROM s1, s2, brk
-    )
-    SELECT CAST(n1 AS BIGINT) AS n_pre, CAST(n2 AS BIGINT) AS n_post,
-           {sql_round_big_int_ratio('b1', 'd1')} AS slope_pre,
-           {sql_round_big_int_ratio('b2', 'd2')} AS slope_post,
-           {sql_round_big_int_ratio('b2 * d1 - b1 * d2', 'd1 * d2')}
-             AS slope_change,
-           {sql_round_big_int_ratio(
-               '(a2 + b2 * (kb + 1)) * d1 - (a1 + b1 * (kb + 1)) * d2',
-               'd1 * d2')} AS level_change
-    FROM co WHERE d1 > 0 AND d2 > 0
-    """
-
-
-@register("events_its_segmented_regression", oracle=_its_oracle())
-def events_its_segmented_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Interrupted-time-series segmented regression on the daily
-    event-count series, break at the series midpoint: independent OLS
-    trends on the two halves, reporting the pre/post slopes, the
-    slope change, and the LEVEL change — the post-model value at the
-    first post-break day minus the pre-model counterfactual projected
-    to that same day. The quasi-experimental EFFECT-SIZE companion to
-    stats_chow_test_break (which only tests whether a break improves
-    fit): ITS answers "by how much did the level jump and the trend
-    bend".
-
-    All coefficients are closed-form integer OLS over the rank from
-    the house broadcast non-equi self-join (calendar-bounded series);
-    slopes are B/D exact integer ratios, the cross-segment
-    differences clear denominators ((B₂D₁ − B₁D₂)/(D₁D₂)), each
-    output one round_big_int_ratio. D₁D₂ ≤ ~10¹⁰ and cross products
-    ≤ ~10²⁶ at sf1×10 — decimal(38)/HUGEINT headroom. Degenerate
-    halves (D = 0) empty the output identically on both engines.
-    """
-    from ..functions.exact import round_big_int_ratio
-
-    t = Tables(spark, sf_dir)
-    daily = t.events.groupBy(F.to_date("ts").alias("day")).agg(
-        F.count(F.lit(1)).alias("y")
-    )
-    b0 = daily.select(F.col("day").alias("day_b"))
-    idx = (
-        daily.join(F.broadcast(b0), F.col("day_b") <= F.col("day"))
-        .groupBy("day", "y")
-        .agg(dec38(F.count(F.lit(1))).alias("k"))
-    )
-    nn = idx.agg(dec38(F.count(F.lit(1))).alias("n_tot"))
-    brk = nn.select(
-        dec38((F.col("n_tot") - F.col("n_tot") % 2) / 2).alias("kb")
-    )
-
-    def sums(pred, sfx):
-        flt = F.when(pred, F.lit(1)).otherwise(F.lit(0)).cast("decimal(38,0)")
-        return [
-            F.sum(flt).alias(f"n{sfx}"),
-            F.sum(flt * F.col("k")).alias(f"st{sfx}"),
-            F.sum(flt * F.col("k") * F.col("k")).alias(f"stt{sfx}"),
-            F.sum(flt * dec38(F.col("y"))).alias(f"sy{sfx}"),
-            F.sum(flt * F.col("k") * dec38(F.col("y"))).alias(f"sty{sfx}"),
-        ]
-
-    stats = idx.crossJoin(F.broadcast(brk)).agg(
-        F.max("kb").alias("kb"),
-        *sums(F.col("k") <= F.col("kb"), "1"),
-        *sums(F.col("k") > F.col("kb"), "2"),
-    )
-
-    def co(sfx):
-        n, st, stt, sy, sty = (
-            F.col(f"n{sfx}"),
-            F.col(f"st{sfx}"),
-            F.col(f"stt{sfx}"),
-            F.col(f"sy{sfx}"),
-            F.col(f"sty{sfx}"),
-        )
-        return [
-            (n * stt - st * st).alias(f"d{sfx}"),
-            (sy * stt - st * sty).alias(f"a{sfx}"),
-            (n * sty - st * sy).alias(f"b{sfx}"),
-        ]
-
-    cos = stats.select("kb", "n1", "n2", *co("1"), *co("2")).filter(
-        (F.col("d1") > 0) & (F.col("d2") > 0)
-    )
-    kb1 = F.col("kb") + F.lit(1).cast("decimal(38,0)")
-    return cos.select(
-        F.col("n1").cast("long").alias("n_pre"),
-        F.col("n2").cast("long").alias("n_post"),
-        round_big_int_ratio(F.col("b1"), F.col("d1")).alias("slope_pre"),
-        round_big_int_ratio(F.col("b2"), F.col("d2")).alias("slope_post"),
-        round_big_int_ratio(
-            F.col("b2") * F.col("d1") - F.col("b1") * F.col("d2"),
-            F.col("d1") * F.col("d2"),
-        ).alias("slope_change"),
-        round_big_int_ratio(
-            (F.col("a2") + F.col("b2") * kb1) * F.col("d1")
-            - (F.col("a1") + F.col("b1") * kb1) * F.col("d2"),
-            F.col("d1") * F.col("d2"),
-        ).alias("level_change"),
     )
 
 

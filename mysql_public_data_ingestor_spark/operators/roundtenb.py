@@ -9,6 +9,9 @@ rank table), product session-duration distribution, a code-detection
 corpus gate, cost-sensitive threshold selection, the AMS F2 moment
 sketch with exact audit, and a weekday-adjusted volume anomaly
 monitor with EXACT integer flagging.
+
+``dq_weekday_volume_anomaly`` lives in ``operators/daily_change.py``
+with the other daily-series queries.
 """
 
 from __future__ import annotations
@@ -510,92 +513,4 @@ def sketch_ams_f2_users(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.abs(F.col("f2_ams") - F.col("f2_exact")), F.col("f2_exact")
             ),
         ).alias("rel_error"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# 6. Weekday-adjusted order-volume anomaly monitor (exact flagging)
-# ---------------------------------------------------------------------------
-
-ANOM_K_SIGMA = 3
-
-
-def _weekday_anomaly_oracle() -> str:
-    k = ANOM_K_SIGMA
-    return f"""
-    WITH daily AS (
-      SELECT CAST(o_orderdate AS DATE) AS day,
-             CAST(count(*) AS BIGINT) AS x
-      FROM orders GROUP BY 1
-    ), wd AS (
-      SELECT day, x, CAST(dayofweek(day) AS BIGINT) AS weekday FROM daily
-    ), per AS (
-      SELECT weekday,
-             CAST(count(*) AS BIGINT) AS n_w,
-             CAST(sum(x) AS HUGEINT) AS s_w,
-             CAST(sum(x::HUGEINT * x) AS HUGEINT) AS q_w
-      FROM wd GROUP BY weekday
-    ), flagged AS (
-      SELECT w.weekday, p.n_w,
-             CASE WHEN p.n_w >= 2
-                       AND (p.n_w::HUGEINT * w.x - p.s_w)
-                           * (p.n_w::HUGEINT * w.x - p.s_w)
-                           * (p.n_w - 1)
-                           >= {k * k}::HUGEINT * p.n_w
-                             * (p.n_w::HUGEINT * p.q_w - p.s_w * p.s_w)
-                  THEN 1 ELSE 0 END AS is_anom
-      FROM wd w JOIN per p USING (weekday)
-    )
-    SELECT weekday, CAST(max(n_w) AS BIGINT) AS n_days,
-           CAST(sum(is_anom) AS BIGINT) AS n_anomalies
-    FROM flagged GROUP BY weekday ORDER BY weekday
-    """
-
-
-@register("dq_weekday_volume_anomaly", oracle=_weekday_anomaly_oracle())
-def dq_weekday_volume_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Weekday-adjusted order-volume anomaly monitor: a day is
-    anomalous when its count deviates >= 3 sigma from ITS OWN
-    WEEKDAY's mean — the seasonality-aware volume check
-    (``events_seasonal_hourly_baseline`` does this for hours of the
-    final day; this audits the WHOLE order history with weekly
-    seasonality removed, the shape a data-quality volume monitor
-    actually ships: Sunday dips are normal, a Sunday spike is not).
-
-    The 3-sigma test is EXACT integer arithmetic — |x - mean_w| >=
-    3*sd_w cross-multiplies to (n*x - S)^2 (n-1) >= 9 n (nQ - S^2),
-    so no sqrt, no float, no boundary flake can move a flag
-    cross-engine. One day-level aggregate, one 7-row weekday profile
-    broadcast back over the day series.
-
-    Weekday convention: DuckDB's dayofweek (0=Sunday..6=Saturday) =
-    Spark's dayofweek - 1.
-    """
-    t = Tables(spark, sf_dir)
-    daily = t.orders.groupBy(F.to_date("o_orderdate").alias("day")).agg(
-        F.count(F.lit(1)).alias("x")
-    )
-    wd = daily.select(
-        "day", "x", (F.dayofweek("day") - 1).cast("long").alias("weekday")
-    )
-    per = wd.groupBy("weekday").agg(
-        F.count(F.lit(1)).alias("n_w"),
-        F.sum(dec38(F.col("x"))).alias("s_w"),
-        F.sum(dec38(F.col("x")) * F.col("x")).alias("q_w"),
-    )
-    j = wd.join(F.broadcast(per), "weekday")
-    dev = dec38(F.col("n_w")) * F.col("x") - F.col("s_w")
-    lhs = dev * dev * (F.col("n_w") - 1)
-    rhs = (
-        F.lit(ANOM_K_SIGMA * ANOM_K_SIGMA).cast("decimal(38,0)")
-        * F.col("n_w")
-        * (dec38(F.col("n_w")) * F.col("q_w") - F.col("s_w") * F.col("s_w"))
-    )
-    flagged = j.select(
-        "weekday",
-        "n_w",
-        F.when((F.col("n_w") >= 2) & (lhs >= rhs), 1).otherwise(0).alias("is_anom"),
-    )
-    return flagged.groupBy("weekday").agg(
-        F.max("n_w").alias("n_days"), F.sum("is_anom").alias("n_anomalies")
     )

@@ -15,6 +15,9 @@ SCALE §5j.7 authoring rule).
 Reference parity note: the reference (Go ingestion pipeline,
 ``/root/reference/main.go``) has no analytics; these extend SURVEY
 §2.C warehouse statistics.
+
+``stats_bartels_rank_daily`` and ``stats_dixon_q_daily`` live in
+``operators/daily_hypothesis.py`` with the other daily-series queries.
 """
 
 from __future__ import annotations
@@ -363,262 +366,6 @@ def stats_brunner_munzel_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .cast("long")
         .alias("bm_w_sq_signed_micro"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# 3. Bartels rank von Neumann randomness test on the daily series
-# ---------------------------------------------------------------------------
-
-
-def _bartels_oracle() -> str:
-    from .roundeleven2 import _SQL_DAILY_COUNTS_IDX
-
-    hd = sql_halfup_div
-    return f"""
-    WITH {_SQL_DAILY_COUNTS_IDX}
-    , dvy AS (
-      SELECT y, CAST(count(*) AS BIGINT) AS cnt FROM idx GROUP BY y
-    ), ry AS (
-      SELECT y, cnt,
-             coalesce(sum(cnt) OVER (ORDER BY y
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cum
-      FROM dvy
-    ), rk AS (
-      SELECT i.k, (2 * r.cum + r.cnt + 1)::HUGEINT AS r2
-      FROM idx i JOIN ry r ON r.y = i.y
-    ), nn AS (
-      SELECT CAST(count(*) AS HUGEINT) AS n, CAST(sum(r2) AS HUGEINT) AS sr2
-      FROM rk
-    ), num AS (
-      SELECT CAST(sum((a.r2 - b.r2) * (a.r2 - b.r2)) AS HUGEINT) AS nm
-      FROM rk a JOIN rk b ON b.k = a.k + 1
-    ), den AS (
-      SELECT CAST(sum((nn.n * rk.r2 - nn.sr2) * (nn.n * rk.r2 - nn.sr2))
-                  AS HUGEINT) AS dn
-      FROM rk, nn
-    )
-    SELECT CAST(nn.n AS BIGINT) AS n_days,
-           CASE WHEN den.dn > 0 THEN
-             CAST({hd('1000000::HUGEINT * num.nm * nn.n * nn.n', 'den.dn')}
-                  AS BIGINT)
-           END AS rvn_micro,
-           CASE WHEN den.dn > 0 THEN
-             CAST(floor(
-               ((CAST(num.nm AS DOUBLE) * CAST(nn.n AS DOUBLE) * CAST(nn.n AS DOUBLE)
-                 / CAST(den.dn AS DOUBLE) - 2.0)
-                * (CAST(num.nm AS DOUBLE) * CAST(nn.n AS DOUBLE) * CAST(nn.n AS DOUBLE)
-                   / CAST(den.dn AS DOUBLE) - 2.0))
-               * CAST(nn.n AS DOUBLE) * 250000.0 + 0.5) AS BIGINT)
-             * (CASE WHEN CAST(num.nm AS DOUBLE) * CAST(nn.n AS DOUBLE)
-                          * CAST(nn.n AS DOUBLE)
-                          < 2.0 * CAST(den.dn AS DOUBLE) THEN -1 ELSE 1 END)
-           END AS rvn_z_sq_signed_micro
-    FROM nn, num, den
-    """
-
-
-@register("stats_bartels_rank_daily", _bartels_oracle())
-def stats_bartels_rank_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bartels rank von Neumann randomness test (1982) on the daily
-    order counts: RVN = sum of squared successive RANK differences
-    over the rank variance — the rank-based (distribution-free)
-    twin of the von Neumann / Durbin–Watson ratio, E[RVN] = 2 under
-    exchangeability, with z^2 = (RVN - 2)^2 * n / 4 (asymptotic
-    Var ~ 4/n). Completes the randomness shelf: turning points weigh
-    local curvature, runs tests weigh sign persistence — Bartels
-    weighs MAGNITUDE-ordered persistence and is the powerful one
-    against smooth trends and slow cycles.
-
-    Exactness: doubled midranks on the bounded distinct-count-value
-    grid; the numerator is exact off the +1 lag join; the denominator
-    clears the mean via n*2R - sum(2R) (the doubling cancels in the
-    ratio); RVN is ONE half-up micro division; the z^2 re-runs the
-    identical double sequence on both engines (the quantized RVN
-    would lose the (RVN-2) cancellation).
-
-    Scale shape: calendar-bounded; one value-grid cumulative
-    (allowlist class), one lag join, two scalar aggregates.
-    """
-    from pyspark.sql.window import Window
-
-    from .roundeleven2 import _daily_counts_idx
-
-    t = Tables(spark, sf_dir)
-    idx = _daily_counts_idx(t)
-    dvy = idx.groupBy("y").agg(F.count(F.lit(1)).alias("cnt"))
-    wv = Window.orderBy("y").rowsBetween(Window.unboundedPreceding, -1)
-    ry = dvy.select(
-        "y", "cnt", F.coalesce(F.sum("cnt").over(wv), F.lit(0)).alias("cum")
-    )
-    rk = idx.join(F.broadcast(ry), "y").select(
-        "k", dec38(2 * F.col("cum") + F.col("cnt") + 1).alias("r2")
-    )
-    nn = rk.agg(
-        dec38(F.count(F.lit(1))).alias("n"), F.sum("r2").alias("sr2")
-    )
-    b = rk.select(F.col("k").alias("kb"), F.col("r2").alias("r2b"))
-    num = (
-        rk.join(b, F.col("kb") == F.col("k") + 1)
-        .agg(
-            F.sum(
-                (F.col("r2") - F.col("r2b")) * (F.col("r2") - F.col("r2b"))
-            ).alias("nm")
-        )
-    )
-    den = rk.crossJoin(F.broadcast(nn)).agg(
-        F.sum(
-            (F.col("n") * F.col("r2") - F.col("sr2"))
-            * (F.col("n") * F.col("r2") - F.col("sr2"))
-        ).alias("dn")
-    )
-    m6 = F.lit(1_000_000).cast("decimal(38,0)")
-    rvn_d = (
-        F.col("nm").cast("double")
-        * F.col("n").cast("double")
-        * F.col("n").cast("double")
-        / F.col("dn").cast("double")
-    )
-    z2 = F.floor(
-        (rvn_d - F.lit(2.0)) * (rvn_d - F.lit(2.0)) * F.col("n").cast("double")
-        * F.lit(250000.0)
-        + F.lit(0.5)
-    ).cast("long")
-    sgn = F.when(
-        F.col("nm").cast("double")
-        * F.col("n").cast("double")
-        * F.col("n").cast("double")
-        < F.lit(2.0) * F.col("dn").cast("double"),
-        F.lit(-1),
-    ).otherwise(F.lit(1))
-    return (
-        nn.crossJoin(F.broadcast(num))
-        .crossJoin(F.broadcast(den))
-        .select(
-            F.col("n").cast("long").alias("n_days"),
-            F.when(
-                F.col("dn") > 0,
-                halfup_div(
-                    m6 * F.col("nm") * F.col("n") * F.col("n"), F.col("dn")
-                ).cast("long"),
-            ).alias("rvn_micro"),
-            F.when(F.col("dn") > 0, z2 * sgn).cast("long").alias(
-                "rvn_z_sq_signed_micro"
-            ),
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
-# 4. Dixon's Q extreme-outlier screen on the daily series
-# ---------------------------------------------------------------------------
-
-
-def _dixon_oracle() -> str:
-    hd = sql_halfup_div
-    return """
-    WITH daily AS (
-      SELECT CAST(o_orderdate AS DATE) AS day, CAST(count(*) AS BIGINT) AS y
-      FROM orders GROUP BY 1
-    ), ext AS (
-      SELECT CAST(min(y) AS BIGINT) AS lo, CAST(max(y) AS BIGINT) AS hi,
-             CAST(count(*) AS BIGINT) AS n,
-             CAST(sum(CASE WHEN y = (SELECT min(y) FROM daily) THEN 1 ELSE 0 END)
-                  AS BIGINT) AS n_lo,
-             CAST(sum(CASE WHEN y = (SELECT max(y) FROM daily) THEN 1 ELSE 0 END)
-                  AS BIGINT) AS n_hi
-      FROM daily
-    ), nbr AS (
-      SELECT e.lo, e.hi, e.n, e.n_lo, e.n_hi,
-             CASE WHEN e.n_lo >= 2 THEN e.lo
-                  ELSE (SELECT min(y) FROM daily WHERE y > e.lo) END AS x2,
-             CASE WHEN e.n_hi >= 2 THEN e.hi
-                  ELSE (SELECT max(y) FROM daily WHERE y < e.hi) END AS xn1
-      FROM ext e
-    )
-    SELECT n AS n_days, lo AS min_daily, hi AS max_daily,
-           x2 AS second_lowest, xn1 AS second_highest,
-           CASE WHEN hi > lo THEN
-             CAST((2000000::HUGEINT * (x2 - lo) + (hi - lo))
-                  // (2::HUGEINT * (hi - lo)) AS BIGINT)
-           END AS q_low_micro,
-           CASE WHEN hi > lo THEN
-             CAST((2000000::HUGEINT * (hi - xn1) + (hi - lo))
-                  // (2::HUGEINT * (hi - lo)) AS BIGINT)
-           END AS q_high_micro
-    FROM nbr
-    """
-
-
-@register("stats_dixon_q_daily", _dixon_oracle())
-def stats_dixon_q_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Dixon's Q ratio (1950) at both extremes of the daily
-    order-count distribution: Q_low = (x(2) - x(1)) / range and
-    Q_high = (x(n) - x(n-1)) / range — the gap-based outlier screen
-    that needs NO moments (``stats_grubbs_acctbal_nation`` is the
-    z-score-based member; Q is what lab practice uses at small n and
-    what survives heavy tails at any n). A large Q says the extreme
-    day is SEPARATED from the rest of the distribution, not just far
-    from the mean — the signature of an ingest incident rather than
-    ordinary volume spread.
-
-    Exactness: order statistics via exact min/max with tie handling
-    (a duplicated extreme makes the neighbor gap exactly 0 — the
-    multiset convention, identical on both engines); the two Q ratios
-    are single half-up micro divisions.
-
-    Scale shape: one scan to the ~2.4k-day table; extremes and
-    conditional neighbor extremes are four scalar aggregates.
-    """
-    t = Tables(spark, sf_dir)
-    daily = t.orders.groupBy(F.to_date("o_orderdate").alias("day")).agg(
-        F.count(F.lit(1)).cast("long").alias("y")
-    )
-    ext = daily.agg(
-        F.min("y").alias("lo"),
-        F.max("y").alias("hi"),
-        F.count(F.lit(1)).cast("long").alias("n"),
-    )
-    cnts = (
-        daily.crossJoin(F.broadcast(ext))
-        .agg(
-            F.sum(F.when(F.col("y") == F.col("lo"), 1).otherwise(0))
-            .cast("long")
-            .alias("n_lo"),
-            F.sum(F.when(F.col("y") == F.col("hi"), 1).otherwise(0))
-            .cast("long")
-            .alias("n_hi"),
-            F.min(F.when(F.col("y") > F.col("lo"), F.col("y"))).alias("above_lo"),
-            F.max(F.when(F.col("y") < F.col("hi"), F.col("y"))).alias("below_hi"),
-        )
-    )
-    j = ext.crossJoin(F.broadcast(cnts)).select(
-        "n",
-        "lo",
-        "hi",
-        F.when(F.col("n_lo") >= 2, F.col("lo"))
-        .otherwise(F.col("above_lo"))
-        .alias("x2"),
-        F.when(F.col("n_hi") >= 2, F.col("hi"))
-        .otherwise(F.col("below_hi"))
-        .alias("xn1"),
-    )
-    m6 = F.lit(1_000_000).cast("decimal(38,0)")
-    rng = dec38(F.col("hi") - F.col("lo"))
-    return j.select(
-        F.col("n").alias("n_days"),
-        F.col("lo").alias("min_daily"),
-        F.col("hi").alias("max_daily"),
-        F.col("x2").alias("second_lowest"),
-        F.col("xn1").alias("second_highest"),
-        F.when(
-            F.col("hi") > F.col("lo"),
-            halfup_div(m6 * dec38(F.col("x2") - F.col("lo")), rng).cast("long"),
-        ).alias("q_low_micro"),
-        F.when(
-            F.col("hi") > F.col("lo"),
-            halfup_div(m6 * dec38(F.col("hi") - F.col("xn1")), rng).cast("long"),
-        ).alias("q_high_micro"),
     )
 
 

@@ -8,10 +8,11 @@ inventory before design (the SCALE §5j.7 authoring rule).
 
 * ``ml_brier_pav_decomposition`` — Murphy decomposition of the Brier
   score over the PAV (isotonic) calibration blocks.
-* ``events_stl_trend_strength`` — FPP-style trend/seasonal strength
-  (Hyndman & Athanasopoulos) off the shared STL-lite derivation.
 * ``stats_kuiper_ab`` — the rotation-invariant KS sibling
   (V = D+ + D-) on returned-vs-refused quantity.
+
+``events_stl_trend_strength`` lives in ``operators/daily_change.py``
+with the other daily-series queries.
 
 Reference parity note: the reference (Go ingestion pipeline,
 ``/root/reference/main.go``) has no analytics; these extend SURVEY
@@ -211,115 +212,6 @@ def ml_brier_pav_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
         res.cast("long").alias("res_pav_micro"),
         unc.cast("long").alias("unc_micro"),
         (brier - (unc + rel - res)).cast("long").alias("decomp_residual_micro"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# 4. FPP trend/seasonal strength off the shared STL-lite derivation
-# ---------------------------------------------------------------------------
-
-
-def _stl_strength_oracle() -> str:
-    from .roundeleven6 import _SQL_STL_DET_CTES
-
-    hd = sql_halfup_div
-    return f"""
-    WITH {_SQL_STL_DET_CTES}
-    , j AS (
-      SELECT CAST(1000000::HUGEINT * i.y AS HUGEINT) - r.d + r.r AS q,
-             r.d AS d, r.r AS r
-      FROM rem0 r JOIN daily i ON i.day = r.day
-    ), v AS (
-      SELECT CAST(count(*) AS HUGEINT) AS m,
-             CAST(sum(q) AS HUGEINT) AS sq,
-             CAST(sum(q * q) AS HUGEINT) AS sqq,
-             CAST(sum(d) AS HUGEINT) AS sd,
-             CAST(sum(d * d) AS HUGEINT) AS sdd,
-             CAST(sum(r) AS HUGEINT) AS sr,
-             CAST(sum(r * r) AS HUGEINT) AS srr
-      FROM j
-    )
-    SELECT CAST(m AS BIGINT) AS n_days,
-           CASE WHEN m * sqq - sq * sq > 0 THEN
-             CAST(greatest(0, {hd(
-                 '1000000::HUGEINT * ((m * sqq - sq * sq) - (m * srr - sr * sr))',
-                 '(m * sqq - sq * sq)')}) AS BIGINT)
-           END AS trend_strength_micro,
-           CASE WHEN m * sdd - sd * sd > 0 THEN
-             CAST(greatest(0, {hd(
-                 '1000000::HUGEINT * ((m * sdd - sd * sd) - (m * srr - sr * sr))',
-                 '(m * sdd - sd * sd)')}) AS BIGINT)
-           END AS seasonal_strength_micro
-    FROM v
-    """
-
-
-@register("events_stl_trend_strength", oracle=_stl_strength_oracle())
-def events_stl_trend_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Trend strength and seasonal strength of the daily order series
-    (Hyndman & Athanasopoulos, FPP3 §4.3; Wang, Smith & Hyndman 2006),
-    off the SHARED STL-lite derivation: F_T = max(0, 1 - Var(R) /
-    Var(deseasonalized)) and F_S = max(0, 1 - Var(R) / Var(detrended)),
-    one row summarizing how much of the series' variation the trend and
-    the weekday cycle each explain — the feature a forecasting pipeline
-    uses to route series (high F_S -> seasonal model; both ~0 -> white
-    noise, don't forecast). VERDICT r12 suggestion executed: the
-    seasonal component is ``events_stl_dow_decomposition``'s published
-    strength; the trend sibling is what was missing.
-
-    Derivation sharing: ``roundeleven6._stl_rem`` /
-    ``_SQL_STL_DET_CTES`` — the detrended (d) and remainder (r) series
-    the STL op, the residual periodogram and now this summary all
-    consume (one derivation, three consumers). The deseasonalized
-    series needs the raw counts back: rem0 joins the `daily` CTE on
-    day (micro: q = 1e6*y - d + r, exact integers, since d = 1e6*(y -
-    trend) and r = d - seasonal).
-
-    Exactness: all three variance blocks are m*sum(x^2) - sum(x)^2 over
-    exact integer micro series; two half-up micro divisions with a
-    greatest(0, .) floor. Headroom: q ~ 1e6*y, so m*sqq ~ m^2 *
-    (1e6*y_max)^2 — at 1e9-row days and a 10k-day calendar this peaks
-    ~1e37, inside decimal(38,0)/HUGEINT (documented bound).
-
-    Scale shape: one fact scan partial-aggregates to the calendar-day
-    domain; everything after (the 7-day band join, the dow seasonal
-    index, the variance blocks) is calendar-bounded. 1 row out.
-    """
-    from .roundeleven6 import _stl_rem
-
-    t = Tables(spark, sf_dir)
-    rem = _stl_rem(t)
-    # mirrors the `daily` CTE in _SQL_DAILY_COUNTS_IDX (a 1-line
-    # aggregate, not a derivation chain — the shared chain starts at
-    # the detrend, which _stl_rem provides)
-    daily = t.orders.groupBy(F.to_date("o_orderdate").alias("day")).agg(
-        dec38(F.count(F.lit(1))).alias("y")
-    )
-    m6 = F.lit(1_000_000).cast("decimal(38,0)")
-    j = rem.join(daily, "day").select(
-        (m6 * F.col("y") - F.col("d") + F.col("r")).alias("q"), "d", "r"
-    )
-    v = j.agg(
-        dec38(F.count(F.lit(1))).alias("m"),
-        F.sum("q").alias("sq"),
-        F.sum(F.col("q") * F.col("q")).alias("sqq"),
-        F.sum("d").alias("sd"),
-        F.sum(F.col("d") * F.col("d")).alias("sdd"),
-        F.sum("r").alias("sr"),
-        F.sum(F.col("r") * F.col("r")).alias("srr"),
-    )
-    zero = F.lit(0).cast("decimal(38,0)")
-    vt = F.col("m") * F.col("sqq") - F.col("sq") * F.col("sq")
-    vd = F.col("m") * F.col("sdd") - F.col("sd") * F.col("sd")
-    vr = F.col("m") * F.col("srr") - F.col("sr") * F.col("sr")
-    return v.select(
-        F.col("m").cast("long").alias("n_days"),
-        F.when(vt > 0, F.greatest(zero, halfup_div(m6 * (vt - vr), vt)))
-        .cast("long")
-        .alias("trend_strength_micro"),
-        F.when(vd > 0, F.greatest(zero, halfup_div(m6 * (vd - vr), vd)))
-        .cast("long")
-        .alias("seasonal_strength_micro"),
     )
 
 

@@ -12,8 +12,9 @@ inventory before design (the SCALE §5j.7 authoring rule):
   capability of order->ship latency against fixed spec limits.
 * ``ml_recall_at_precision_floor`` — max recall subject to a
   precision SLA over the exact score grid (3 floors).
-* ``events_dfa_daily`` — detrended fluctuation analysis of the daily
-  order series over dyadic box sizes, with the log-log alpha.
+
+``events_dfa_daily`` lives in ``operators/daily_spectral.py`` with the
+other daily-series queries.
 
 Reference parity note: the reference (Go ingestion pipeline,
 ``/root/reference/main.go``) has no analytics; these extend SURVEY
@@ -488,196 +489,4 @@ def ml_recall_at_precision_floor(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("recall_micro"),
         )
         .orderBy(F.col("floor_num").cast("double") / F.col("floor_den"))
-    )
-
-
-# ---------------------------------------------------------------------------
-# 5. Detrended fluctuation analysis of the daily order series
-# ---------------------------------------------------------------------------
-
-DFA_SCALES = (8, 16, 32, 64)
-LN2_MICRO = 693147  # 1e6 * ln 2, anchored in tests/test_roundthirteen7.py
-
-
-def _dfa_oracle() -> str:
-    from ..functions.detmath import sql_det_ln_steps
-    from .roundeleven2 import _SQL_DAILY_COUNTS_IDX
-
-    hd = sql_halfup_div
-    scales = ", ".join(str(s) for s in DFA_SCALES)
-    # alpha = sum(c_i * ln F^2(2^i)) / (20 ln 2), c = (-3, -1, 1, 3)
-    cexpr = ("sum((CASE s WHEN 8 THEN -3 WHEN 16 THEN -1 WHEN 32 THEN 1 "
-             "ELSE 3 END) * lnf2)")
-    return f"""
-    WITH {_SQL_DAILY_COUNTS_IDX.strip()}
-    , tot AS (
-      SELECT CAST(count(*) AS HUGEINT) AS nd, CAST(sum(y) AS HUGEINT) AS sy
-      FROM idx
-    ), prof AS (
-      SELECT a.k, CAST(t.nd * sum(b.y) - a.k * t.sy AS HUGEINT) AS p
-      FROM idx a JOIN idx b ON b.k <= a.k, tot t
-      GROUP BY a.k, t.nd, t.sy
-    ), sc(s) AS (SELECT unnest([{scales}])),
-    boxed AS (
-      SELECT sc.s, CAST((pr.k - 1) // sc.s AS BIGINT) AS b, pr.k, pr.p
-      FROM prof pr, sc, tot t
-      WHERE (pr.k - 1) // sc.s < t.nd // sc.s
-    ), bsum AS (
-      SELECT s, b,
-             CAST(count(*) AS HUGEINT) AS m,
-             CAST(sum(k) AS HUGEINT) AS sx,
-             CAST(sum(k * k) AS HUGEINT) AS sxx,
-             CAST(sum(p) AS HUGEINT) AS sp,
-             CAST(sum(k * p) AS HUGEINT) AS sxp,
-             CAST(sum(p * p) AS HUGEINT) AS spp
-      FROM boxed GROUP BY s, b
-    ), bres AS (
-      SELECT s, CAST(floor(
-        ((CAST(m * spp - sp * sp AS DOUBLE) * CAST(m * sxx - sx * sx AS DOUBLE))
-         - (CAST(m * sxp - sx * sp AS DOUBLE) * CAST(m * sxp - sx * sp AS DOUBLE)))
-        / CAST(m * (m * sxx - sx * sx) AS DOUBLE) + 0.5) AS BIGINT) AS ssres_q
-      FROM bsum
-    ), f2 AS (
-      SELECT r.s, CAST(count(*) AS BIGINT) AS n_boxes,
-             (CAST(sum(r.ssres_q) AS DOUBLE)
-              / CAST(count(*) * r.s AS DOUBLE)
-              / CAST(t.nd * t.nd AS DOUBLE)) AS f2_dbl
-      FROM bres r, tot t GROUP BY r.s, t.nd
-    ), {sql_det_ln_steps('f2', 'f2_dbl', 'lnf2')},
-    alpha AS (
-      SELECT CAST({hd(f'1000::HUGEINT * ({cexpr})', str(20 * LN2_MICRO))}
-                  AS BIGINT) AS alpha_milli
-      FROM lnf2_rel
-    )
-    SELECT CAST(f.s AS BIGINT) AS scale_days, f.n_boxes,
-           CAST(floor(f.f2_dbl * 1000.0 + 0.5) AS BIGINT) AS f2_milli,
-           a.alpha_milli
-    FROM lnf2_rel f, alpha a ORDER BY f.s
-    """
-
-
-@register("events_dfa_daily", oracle=_dfa_oracle())
-def events_dfa_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Detrended fluctuation analysis (Peng et al. 1994) of the daily
-    order-count series: integrate the centered series into a profile,
-    split into non-overlapping boxes of s in {8, 16, 32, 64} days,
-    least-squares detrend each box, and report the mean squared
-    fluctuation F^2(s) per scale plus the log-log slope alpha (the
-    long-memory exponent: 0.5 = uncorrelated, > 0.5 persistent,
-    -> 1 = 1/f). ``stats_hurst_rs_daily`` prices the same question via
-    rescaled range; DFA is the modern default because it stays valid
-    under nonstationarity (the trend is removed per box, not assumed
-    absent) — the pair disagreeing IS the nonstationarity signal.
-
-    Exactness: the profile is exact integer (P_k = N*cum_k - k*S, the
-    N-scaled centered prefix sum); per-box OLS residual sums use the
-    closed form [(m Spp - Sp^2)(m Sxx - Sx^2) - (m Sxp - Sx Sp)^2] /
-    [m (m Sxx - Sx^2)] over exact integer sufficient statistics,
-    evaluated as ONE shape-matched IEEE double sequence per box and
-    floor-quantized so the cross-box sum is an order-independent
-    integer. F^2 de-scales by N^2 in the same double shape; alpha uses
-    the deterministic fixed-point ln (micro-nats) and the dyadic-grid
-    closed form sum(c_i ln F2_i) / (20 ln 2) with the single literal
-    LN2_MICRO (constant-anchored in the gate tests).
-
-    Scale shape: one fact scan partial-aggregates to the calendar-day
-    domain; the profile prefix is a day^2 rank join over the bounded
-    calendar (the KPSS class); boxes/scales explode the POST-
-    AGGREGATION day table x4. 4 rows out.
-    """
-    from ..functions.detmath import det_ln_q
-    from .roundeleven2 import _daily_counts_idx
-
-    t = Tables(spark, sf_dir)
-    idx = _daily_counts_idx(t).localCheckpoint(eager=True)  # calendar-sized
-    tot = idx.agg(
-        dec38(F.count(F.lit(1))).alias("nd"), F.sum("y").alias("sy")
-    )
-    b = idx.select(F.col("k").alias("k_b"), F.col("y").alias("y_b"))
-    prof = (
-        idx.join(F.broadcast(b), F.col("k_b") <= F.col("k"))
-        .groupBy("k")
-        .agg(F.sum("y_b").alias("cumy"))
-        .crossJoin(F.broadcast(tot))
-        .select(
-            "k",
-            "nd",
-            (F.col("nd") * F.col("cumy") - F.col("k") * F.col("sy")).alias("p"),
-        )
-    )
-    sc = prof.sparkSession.createDataFrame(
-        [(s,) for s in DFA_SCALES], "s long"
-    )
-    boxed = (
-        prof.crossJoin(F.broadcast(sc))
-        .filter(
-            F.floor((F.col("k") - 1) / F.col("s"))
-            < F.floor(F.col("nd").cast("long") / F.col("s"))
-        )
-        .select(
-            "s",
-            F.floor((F.col("k") - 1) / F.col("s")).alias("b"),
-            dec38(F.col("k")).alias("kk"),
-            F.col("p"),
-        )
-    )
-    bsum = boxed.groupBy("s", "b").agg(
-        dec38(F.count(F.lit(1))).alias("m"),
-        F.sum("kk").alias("sx"),
-        F.sum(F.col("kk") * F.col("kk")).alias("sxx"),
-        F.sum("p").alias("sp"),
-        F.sum(F.col("kk") * F.col("p")).alias("sxp"),
-        F.sum(F.col("p") * F.col("p")).alias("spp"),
-    )
-    g = F.col("m") * F.col("sxx") - F.col("sx") * F.col("sx")
-    n1 = F.col("m") * F.col("spp") - F.col("sp") * F.col("sp")
-    n2 = F.col("m") * F.col("sxp") - F.col("sx") * F.col("sp")
-    ssres_q = F.floor(
-        ((n1.cast("double") * g.cast("double"))
-         - (n2.cast("double") * n2.cast("double")))
-        / (F.col("m") * g).cast("double")
-        + F.lit(0.5)
-    ).cast("decimal(38,0)")
-    bres = bsum.select("s", ssres_q.alias("ssres_q"))
-    f2 = (
-        bres.groupBy("s")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_boxes"),
-             F.sum("ssres_q").alias("sres"))
-        .crossJoin(F.broadcast(tot.select("nd")))
-        .select(
-            "s",
-            "n_boxes",
-            (
-                F.col("sres").cast("double")
-                / (F.col("n_boxes") * F.col("s")).cast("double")
-                / (F.col("nd") * F.col("nd")).cast("double")
-            ).alias("f2_dbl"),
-        )
-    )
-    lnf2 = f2.select("s", "n_boxes", "f2_dbl", det_ln_q(F.col("f2_dbl")).alias("lnf2"))
-    c = (
-        F.when(F.col("s") == 8, -3)
-        .when(F.col("s") == 16, -1)
-        .when(F.col("s") == 32, 1)
-        .otherwise(3)
-    )
-    alpha = lnf2.agg(F.sum(c * F.col("lnf2")).alias("csum")).select(
-        halfup_div(
-            F.lit(1000).cast("decimal(38,0)") * dec38(F.col("csum")),
-            F.lit(20 * LN2_MICRO).cast("decimal(38,0)"),
-        )
-        .cast("long")
-        .alias("alpha_milli")
-    )
-    return (
-        lnf2.crossJoin(F.broadcast(alpha))
-        .select(
-            F.col("s").alias("scale_days"),
-            "n_boxes",
-            F.floor(F.col("f2_dbl") * F.lit(1000.0) + F.lit(0.5))
-            .cast("long")
-            .alias("f2_milli"),
-            "alpha_milli",
-        )
-        .orderBy("scale_days")
     )

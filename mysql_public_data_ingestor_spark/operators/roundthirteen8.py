@@ -13,8 +13,9 @@ inventory before design (the SCALE §5j.7 authoring rule):
   the Youden-optimal operating point (threshold stability).
 * ``embedding_pq_distortion_audit`` — per-subspace quantization
   distortion of the production PQ codebook.
-* ``events_qs_seasonality_test`` — QS statistic (Ljung-Box at
-  seasonal lags 7/14) on the differenced daily series.
+
+``events_qs_seasonality_test`` lives in
+``operators/daily_hypothesis.py`` with the other daily-series queries.
 
 Reference parity note: the reference (Go ingestion pipeline,
 ``/root/reference/main.go``) has no analytics; these extend SURVEY
@@ -492,126 +493,3 @@ def embedding_pq_distortion_audit(spark: SparkSession, sf_dir: str) -> DataFrame
                 "max_d2_micro", "n_codewords_used")
         .orderBy("m")
     )
-
-
-# ---------------------------------------------------------------------------
-# 5. QS seasonality test on the differenced daily series
-# ---------------------------------------------------------------------------
-
-QS_LAGS = (7, 14)
-
-
-def _qs_oracle() -> str:
-    from .roundeleven2 import _SQL_DAILY_COUNTS_IDX
-
-    lag_terms = " + ".join(
-        f"((CAST(c{L} AS DOUBLE) * CAST(c{L} AS DOUBLE)) / CAST(c0 AS DOUBLE)"
-        f" / CAST(c0 AS DOUBLE) / CAST(m - {L} AS DOUBLE))"
-        for L in QS_LAGS
-    )
-    lag_cols = ", ".join(
-        f"""(SELECT CAST(sum(a.w * b.w) AS HUGEINT) FROM wser a
-             JOIN wser b ON b.j = a.j + {L}) AS c{L}"""
-        for L in QS_LAGS
-    )
-    r_cols = ", ".join(
-        f"""CASE WHEN c0 > 0 THEN
-              CAST(floor(abs(CAST(c{L} AS DOUBLE) / CAST(c0 AS DOUBLE))
-                         * 1000000.0 + 0.5) AS BIGINT)
-              * (CASE WHEN c{L} < 0 THEN -1 ELSE 1 END) END AS r{L}_micro"""
-        for L in QS_LAGS
-    )
-    return f"""
-    WITH {_SQL_DAILY_COUNTS_IDX.strip()}
-    , zser AS (
-      SELECT CAST(a.k - 1 AS HUGEINT) AS j, CAST(a.y - b.y AS HUGEINT) AS z
-      FROM idx a JOIN idx b ON b.k = a.k - 1
-    ), mt AS (
-      SELECT CAST(count(*) AS HUGEINT) AS m, CAST(sum(z) AS HUGEINT) AS sz
-      FROM zser
-    ), wser AS (
-      SELECT z.j, (t.m * z.z - t.sz) AS w FROM zser z, mt t
-    ), cc AS (
-      SELECT (SELECT CAST(sum(w * w) AS HUGEINT) FROM wser) AS c0,
-             {lag_cols},
-             (SELECT m FROM mt) AS m
-    )
-    SELECT CAST(m AS BIGINT) AS m, {r_cols},
-           CASE WHEN c0 > 0 THEN CAST(floor(
-             ({lag_terms}) * CAST(m * (m + 2) AS DOUBLE) * 1000.0 + 0.5)
-             AS BIGINT) END AS qs_milli
-    FROM cc
-    """
-
-
-@register("events_qs_seasonality_test", oracle=_qs_oracle())
-def events_qs_seasonality_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """QS residual-seasonality test on the FIRST-DIFFERENCED daily
-    order series: the Ljung-Box statistic restricted to the seasonal
-    lags {{7, 14}} (the X-13ARIMA-SEATS / `seasonal` package QS
-    diagnostic) — "after removing the trend by differencing, is there
-    still weekly structure?". ``stats_ljung_box_daily`` sweeps the
-    short lags of the level series (trend leaks into every lag); QS
-    isolates exactly the two harmonics a weekly cycle would leave in
-    the differences, which is the accept/reject gate seasonal
-    adjustment pipelines publish.
-
-    Exactness: differencing and centering stay integer (w_j = m z_j -
-    sum z, the N-scaled centering shared with the DFA profile); the
-    lag products c_7 / c_14 and the energy c_0 are exact integer sums
-    over calendar-bounded lag joins; each r_L and the QS combination
-    are ONE shape-matched IEEE double sequence each (the Dunn
-    precedent), sign-carried for r_L, quantized at micro/milli.
-
-    Scale shape: one fact scan partial-aggregates to the calendar-day
-    domain; the difference and lag joins are day-keyed equi-joins on
-    the POST-AGGREGATION calendar table; 1 row out.
-    """
-    from .roundeleven2 import _daily_counts_idx
-
-    t = Tables(spark, sf_dir)
-    idx = _daily_counts_idx(t).localCheckpoint(eager=True)
-    prev = idx.select((F.col("k") + 1).alias("k"), F.col("y").alias("y_prev"))
-    zser = (
-        idx.join(prev, "k")
-        .select((F.col("k") - 1).alias("j"), (F.col("y") - F.col("y_prev")).alias("z"))
-        .localCheckpoint(eager=True)  # calendar-sized; four consumers
-    )
-    mt = zser.agg(dec38(F.count(F.lit(1))).alias("m"), F.sum("z").alias("sz"))
-    wser = zser.crossJoin(F.broadcast(mt)).select(
-        "j", (F.col("m") * F.col("z") - F.col("sz")).alias("w"), "m"
-    )
-    c0 = wser.agg(F.sum(F.col("w") * F.col("w")).alias("c0"), F.first("m").alias("m"))
-    lag_aggs = {}
-    for L in QS_LAGS:
-        b = wser.select((F.col("j") + L).alias("j"), F.col("w").alias("w_b"))
-        lag_aggs[L] = (
-            wser.join(b, "j")
-            .agg(F.sum(F.col("w_b") * F.col("w")).alias(f"c{L}"))
-        )
-    cc = c0
-    for L in QS_LAGS:
-        cc = cc.crossJoin(F.broadcast(lag_aggs[L]))
-    md = F.col("m").cast("double")
-    cols = [F.col("m").cast("long").alias("m")]
-    qs_terms = None
-    for L in QS_LAGS:
-        cL = F.col(f"c{L}")
-        r = F.floor(
-            F.abs(cL.cast("double") / F.col("c0").cast("double")) * F.lit(1e6)
-            + F.lit(0.5)
-        ).cast("long") * F.when(cL < 0, F.lit(-1)).otherwise(F.lit(1))
-        cols.append(F.when(F.col("c0") > 0, r).alias(f"r{L}_micro"))
-        term = (
-            (cL.cast("double") * cL.cast("double"))
-            / F.col("c0").cast("double")
-            / F.col("c0").cast("double")
-            / (F.col("m") - L).cast("double")
-        )
-        qs_terms = term if qs_terms is None else qs_terms + term
-    qs = F.floor(
-        qs_terms * (F.col("m") * (F.col("m") + 2)).cast("double") * F.lit(1000.0)
-        + F.lit(0.5)
-    ).cast("long")
-    cols.append(F.when(F.col("c0") > 0, qs).alias("qs_milli"))
-    return cc.select(*cols)

@@ -7,8 +7,6 @@ plan-barred in ``tests/test_roundthirteen9.py`` (same-commit gate
 rule). Every name was checked against the full 558-name registry
 inventory before design (the SCALE §5j.7 authoring rule):
 
-* ``events_sample_entropy_daily`` — SampEn(m=2, r = 0.2 IQR) of the
-  daily order series, exact pair counting + det-ln.
 * ``events_interarrival_memory_coeff`` — the Goh-Barabási memory
   coefficient M (lag-1 correlation of inter-arrival times), the
   missing axis of the (B, M) phase diagram next to
@@ -18,8 +16,10 @@ inventory before design (the SCALE §5j.7 authoring rule):
   exact within-limits ppm).
 * ``stats_bh_fdr_nation_urgency`` — Benjamini-Hochberg step-up FDR
   control over the per-nation urgency-rate z^2 family.
-* ``stats_effective_sample_size_daily`` — Kish-style effective N of
-  the autocorrelated daily series (lags 1..7).
+
+``events_sample_entropy_daily``, ``stats_effective_sample_size_daily``
+live in ``operators/daily_hypothesis.py`` and
+``operators/daily_spectral.py`` with the other daily-series queries.
 
 Reference parity note: the reference (Go ingestion pipeline,
 ``/root/reference/main.go``) has no analytics; these extend SURVEY
@@ -34,157 +34,6 @@ from pyspark.sql import functions as F
 from ..functions.exact import dec38, halfup_div, sql_halfup_div
 from ..registry import register
 from ..tables import Tables
-
-# ---------------------------------------------------------------------------
-# 1. Sample entropy of the daily order series
-# ---------------------------------------------------------------------------
-
-SAMPEN_M = 2
-
-
-def _sampen_oracle() -> str:
-    from ..functions.detmath import sql_det_ln_steps
-    from .roundeleven2 import _SQL_DAILY_COUNTS_IDX
-
-    return f"""
-    WITH {_SQL_DAILY_COUNTS_IDX.strip()}
-    , nn AS (SELECT CAST(count(*) AS HUGEINT) AS n FROM idx),
-    vals AS (
-      SELECT y AS v, CAST(count(*) AS HUGEINT) AS c FROM idx GROUP BY y
-    ), vc AS (
-      SELECT a.v, CAST(sum(b.c) AS HUGEINT) AS cum
-      FROM vals a JOIN vals b ON b.v <= a.v GROUP BY a.v
-    ), iqr AS (
-      SELECT greatest(1,
-        {sql_halfup_div(
-            '''2 * ((SELECT min(v) FROM vc, nn WHERE cum >= (3 * n + 3) // 4)
-                 - (SELECT min(v) FROM vc, nn WHERE cum >= (n + 3) // 4))''',
-            '10')}) AS r
-    ), tri AS (
-      SELECT a.k, a.y AS y0, b.y AS y1, c.y AS y2
-      FROM idx a JOIN idx b ON b.k = a.k + 1 JOIN idx c ON c.k = a.k + 2
-    ), pairs AS (
-      SELECT CAST(sum(CASE WHEN abs(a.y0 - b.y0) <= i.r
-                            AND abs(a.y1 - b.y1) <= i.r THEN 1 ELSE 0 END)
-                  AS HUGEINT) AS b_cnt,
-             CAST(sum(CASE WHEN abs(a.y0 - b.y0) <= i.r
-                            AND abs(a.y1 - b.y1) <= i.r
-                            AND abs(a.y2 - b.y2) <= i.r THEN 1 ELSE 0 END)
-                  AS HUGEINT) AS a_cnt
-      FROM tri a JOIN tri b ON b.k > a.k, iqr i
-    ), lnin AS (
-      SELECT n.n, i.r, p.b_cnt, p.a_cnt,
-             CAST(p.b_cnt AS DOUBLE) AS b_dbl,
-             CAST(p.a_cnt AS DOUBLE) AS a_dbl
-      FROM pairs p, iqr i, nn n
-    ), {sql_det_ln_steps('lnin', 'b_dbl', 'lnb')},
-    {sql_det_ln_steps('lnb_rel', 'a_dbl', 'lna')}
-    SELECT CAST(n AS BIGINT) AS n_days, CAST({SAMPEN_M} AS BIGINT) AS m,
-           CAST(r AS BIGINT) AS r_tol,
-           CAST(b_cnt AS BIGINT) AS b_pairs, CAST(a_cnt AS BIGINT) AS a_pairs,
-           CASE WHEN a_cnt > 0 AND b_cnt > 0 THEN lnb - lna END
-             AS sampen_micro
-    FROM lna_rel
-    """
-
-
-@register("events_sample_entropy_daily", oracle=_sampen_oracle())
-def events_sample_entropy_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sample entropy SampEn(m=2, r) of the daily order series
-    (Richman & Moorman 2000): -ln(A/B), where B counts template pairs
-    matching for 2 consecutive days within tolerance r and A those
-    still matching at day 3 — the regularity statistic that, unlike
-    approximate entropy, excludes self-matches and is (largely)
-    length-consistent. Low SampEn = the series repeats its own
-    patterns (strong weekly template); high = pattern-free. Tolerance
-    r is the conventional 0.2 x dispersion, taken as 0.2 x the EXACT
-    discrete IQR (integer, floor 1) so the whole statistic is a pure
-    function of the data.
-
-    Exactness: templates and tolerance are integers; A and B are exact
-    integer pair counts over the calendar-bounded template self-join;
-    SampEn = ln B - ln A via the deterministic fixed-point ln
-    (micro-nats), NULL-guarded when either count is zero.
-
-    Scale shape: one fact scan partial-aggregates to the calendar-day
-    domain; the template table is two calendar lag joins; the pair
-    count is the day^2 rank join (the KPSS/DFA bounded class). 1 row
-    out.
-    """
-    from ..functions.detmath import det_ln_q
-    from .roundeleven2 import _daily_counts_idx
-
-    t = Tables(spark, sf_dir)
-    # r15 (VERDICT r14 item 1): _daily_counts_idx is already a session-
-    # materialized warehouse table; the round-14 eager localCheckpoint
-    # on top re-copied it into block storage on every timed run
-    # (driver-contradicted, 3.29→3.71 s). Branches re-scan the tiny
-    # parquet instead.
-    idx = _daily_counts_idx(t)
-    nn = idx.agg(dec38(F.count(F.lit(1))).alias("n"))
-    vals = idx.groupBy(F.col("y").alias("v")).agg(dec38(F.count(F.lit(1))).alias("c"))
-    vb = vals.select(F.col("v").alias("v_b"), F.col("c").alias("c_b"))
-    vc = (
-        vals.join(F.broadcast(vb), F.col("v_b") <= F.col("v"))
-        .groupBy("v")
-        .agg(F.sum("c_b").alias("cum"))
-        .crossJoin(F.broadcast(nn))
-    )
-    q1 = vc.filter(
-        F.col("cum") >= (F.col("n") + 3 - (F.col("n") + 3) % 4) / 4
-    ).agg(F.min("v").alias("q1"))
-    q3 = vc.filter(
-        F.col("cum") >= (3 * F.col("n") + 3 - (3 * F.col("n") + 3) % 4) / 4
-    ).agg(F.min("v").alias("q3"))
-    iqr = (
-        q1.crossJoin(F.broadcast(q3))
-        .select(
-            F.greatest(
-                F.lit(1).cast("decimal(38,0)"),
-                halfup_div(
-                    F.lit(2).cast("decimal(38,0)") * (F.col("q3") - F.col("q1")),
-                    F.lit(10).cast("decimal(38,0)"),
-                ),
-            ).alias("r")
-        )
-    )
-    b1 = idx.select((F.col("k") - 1).alias("k"), F.col("y").alias("y1"))
-    b2 = idx.select((F.col("k") - 2).alias("k"), F.col("y").alias("y2"))
-    tri = (
-        idx.join(b1, "k").join(b2, "k").select("k", F.col("y").alias("y0"), "y1", "y2")
-    )
-    tb = tri.select(
-        F.col("k").alias("k_b"),
-        F.col("y0").alias("y0_b"),
-        F.col("y1").alias("y1_b"),
-        F.col("y2").alias("y2_b"),
-    )
-    m2 = (F.abs(F.col("y0") - F.col("y0_b")) <= F.col("r")) & (
-        F.abs(F.col("y1") - F.col("y1_b")) <= F.col("r")
-    )
-    m3 = m2 & (F.abs(F.col("y2") - F.col("y2_b")) <= F.col("r"))
-    pairs = (
-        tri.join(F.broadcast(tb), F.col("k_b") > F.col("k"))
-        .crossJoin(F.broadcast(iqr))
-        .agg(
-            F.sum(F.when(m2, 1).otherwise(0)).cast("long").alias("b_cnt"),
-            F.sum(F.when(m3, 1).otherwise(0)).cast("long").alias("a_cnt"),
-            F.first("r").alias("r"),
-        )
-    )
-    out = pairs.crossJoin(F.broadcast(nn))
-    lnb = det_ln_q(F.col("b_cnt").cast("double"))
-    lna = det_ln_q(F.col("a_cnt").cast("double"))
-    return out.select(
-        F.col("n").cast("long").alias("n_days"),
-        F.lit(SAMPEN_M).cast("long").alias("m"),
-        F.col("r").cast("long").alias("r_tol"),
-        F.col("b_cnt").alias("b_pairs"),
-        F.col("a_cnt").alias("a_pairs"),
-        F.when((F.col("a_cnt") > 0) & (F.col("b_cnt") > 0), lnb - lna).alias(
-            "sampen_micro"
-        ),
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -594,98 +443,4 @@ def stats_bh_fdr_nation_urgency(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("reject"),
         )
         .orderBy("bh_rank", "nation")
-    )
-
-
-# ---------------------------------------------------------------------------
-# 5. Effective sample size of the autocorrelated daily series
-# ---------------------------------------------------------------------------
-
-ESS_MAX_LAG = 7
-
-
-def _ess_oracle() -> str:
-    from .roundeleven2 import _SQL_DAILY_COUNTS_IDX
-
-    hd = sql_halfup_div
-    lag_cols = " + ".join(
-        f"""(SELECT CAST(sum(a.w * b.w) AS HUGEINT) FROM wser a
-             JOIN wser b ON b.j = a.j + {L})"""
-        for L in range(1, ESS_MAX_LAG + 1)
-    )
-    return f"""
-    WITH {_SQL_DAILY_COUNTS_IDX.strip()}
-    , mt AS (
-      SELECT CAST(count(*) AS HUGEINT) AS m, CAST(sum(y) AS HUGEINT) AS sy
-      FROM idx
-    ), wser AS (
-      SELECT i.k AS j, (t.m * i.y - t.sy) AS w FROM idx i, mt t
-    ), cc AS (
-      SELECT (SELECT CAST(sum(w * w) AS HUGEINT) FROM wser) AS c0,
-             ({lag_cols}) AS csum,
-             (SELECT m FROM mt) AS m
-    )
-    SELECT CAST(m AS BIGINT) AS n_days,
-           CASE WHEN c0 > 0 THEN
-             CAST({hd('1000000::HUGEINT * csum', 'c0')} AS BIGINT) END
-             AS sum_r_micro,
-           CASE WHEN c0 > 0 AND c0 + 2 * csum > 0 THEN
-             CAST({hd('1000::HUGEINT * m * c0', 'c0 + 2 * csum')} AS BIGINT)
-           END AS ess_milli
-    FROM cc
-    """
-
-
-@register("stats_effective_sample_size_daily", oracle=_ess_oracle())
-def stats_effective_sample_size_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Kish-style effective sample size of the daily order series:
-    N_eff = N / (1 + 2 sum_{k=1..7} rho_k) — how many INDEPENDENT
-    observations the autocorrelated daily counts are actually worth
-    when a monitor builds a confidence interval on the daily mean
-    (Kish 1965; the MCMC ESS with a hard lag cutoff). The ACF family
-    reports the rho_k themselves; this is the single number that says
-    "your 2,400-day history has the statistical weight of N_eff
-    independent days", i.e. how much to widen the bands.
-
-    Exactness: the centered series w_j = N y_j - S is exact integer
-    (the QS/DFA convention); c_0 and the 7 lag autocovariances are
-    exact integer sums over calendar lag joins; both outputs are pure
-    rational — ONE half-up division each (sum of rho in micro; ESS in
-    milli-days = 1e3 N c_0 / (c_0 + 2 sum c_k)), NULL-guarded for the
-    degenerate variance and non-positive denominator.
-
-    Scale shape: one fact scan partial-aggregates to the calendar-day
-    domain; 7 day-keyed lag equi-joins on the POST-AGGREGATION
-    table; 1 row out.
-    """
-    from .roundeleven2 import _daily_counts_idx
-
-    t = Tables(spark, sf_dir)
-    idx = _daily_counts_idx(t).localCheckpoint(eager=True)
-    mt = idx.agg(dec38(F.count(F.lit(1))).alias("m"), F.sum("y").alias("sy"))
-    wser = idx.crossJoin(F.broadcast(mt)).select(
-        F.col("k").alias("j"),
-        (F.col("m") * F.col("y") - F.col("sy")).alias("w"),
-        "m",
-    )
-    c0 = wser.agg(
-        F.sum(F.col("w") * F.col("w")).alias("c0"), F.first("m").alias("m")
-    )
-    cc = c0
-    for L in range(1, ESS_MAX_LAG + 1):
-        b = wser.select((F.col("j") + L).alias("j"), F.col("w").alias("w_b"))
-        cL = wser.join(b, "j").agg(F.sum(F.col("w_b") * F.col("w")).alias(f"c{L}"))
-        cc = cc.crossJoin(F.broadcast(cL))
-    csum = sum(F.col(f"c{L}") for L in range(1, ESS_MAX_LAG + 1))
-    m6 = F.lit(1_000_000).cast("decimal(38,0)")
-    k3 = F.lit(1000).cast("decimal(38,0)")
-    den = F.col("c0") + F.lit(2).cast("decimal(38,0)") * csum
-    return cc.select(
-        F.col("m").cast("long").alias("n_days"),
-        F.when(F.col("c0") > 0, halfup_div(m6 * csum, F.col("c0")).cast("long"))
-        .alias("sum_r_micro"),
-        F.when(
-            (F.col("c0") > 0) & (den > 0),
-            halfup_div(k3 * F.col("m") * F.col("c0"), den).cast("long"),
-        ).alias("ess_milli"),
     )

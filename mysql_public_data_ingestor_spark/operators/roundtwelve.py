@@ -9,6 +9,9 @@ the fixed-period periodogram, the Fano-factor burstiness curve across
 window widths, a punctuation-profile chi-square between sources,
 deterministic permutation importance
 for the classifier score, and a bottom-k sketch mergeability audit.
+
+``events_spectral_entropy_periods`` lives in
+``operators/daily_spectral.py`` with the other daily-series queries.
 """
 
 from __future__ import annotations
@@ -19,142 +22,6 @@ from pyspark.sql import functions as F
 from ..functions.exact import dec38, halfup_div, sql_halfup_div
 from ..registry import register
 from ..tables import Tables
-
-# ---------------------------------------------------------------------------
-# 1. Spectral entropy over the fixed-period periodogram shares
-# ---------------------------------------------------------------------------
-
-
-def _spectral_oracle() -> str:
-    from ..functions.detmath import sql_det_ln_steps
-    from .roundeleven import PGRAM_COSQ, PGRAM_PERIODS, PGRAM_SINQ
-
-    per_p = []
-    for p in PGRAM_PERIODS:
-        cosl = ", ".join(str(v) for v in PGRAM_COSQ[p])
-        sinl = ", ".join(str(v) for v in PGRAM_SINQ[p])
-        per_p.append(
-            f"""
-      SELECT {p}::BIGINT AS period,
-             CAST(sum(z * ([{cosl}])[((k - 1) % {p}) + 1]) AS HUGEINT) AS sc,
-             CAST(sum(z * ([{sinl}])[((k - 1) % {p}) + 1]) AS HUGEINT) AS ss
-      FROM cent"""
-        )
-    unions = " UNION ALL ".join(per_p)
-    hd = sql_halfup_div
-    return f"""
-    WITH daily AS (
-      SELECT CAST(o_orderdate AS DATE) AS day, CAST(count(*) AS BIGINT) AS y
-      FROM orders GROUP BY 1
-    ), idx AS (
-      SELECT a.day, a.y, CAST(count(*) AS BIGINT) AS k
-      FROM daily a JOIN daily b ON b.day <= a.day
-      GROUP BY a.day, a.y
-    ), tot AS (
-      SELECT CAST(count(*) AS BIGINT) AS n, CAST(sum(y) AS BIGINT) AS s
-      FROM idx
-    ), cent AS (
-      SELECT i.k, (t.n * i.y - t.s) AS z FROM idx i, tot t
-    ), vecs AS ({unions}),
-    pw AS (
-      SELECT period, (sc * sc + ss * ss) AS p FROM vecs
-    ), tp AS (SELECT CAST(sum(p) AS HUGEINT) AS tpw FROM pw),
-    shares AS (
-      SELECT period, CAST({hd('1000000::HUGEINT * p', 'tp.tpw')} AS BIGINT) AS share_micro
-      FROM pw, tp WHERE tp.tpw > 0
-    ), sh2 AS (SELECT period, share_micro FROM shares WHERE share_micro > 0),
-    {sql_det_ln_steps('sh2', 'share_micro', 'lns')},
-    ent AS (
-      -- H = -sum p ln p = sum p (ln 1e6 - ln(share_micro)) with p = share/1e6
-      SELECT CAST(sum(share_micro * (13815511 - lns)) AS HUGEINT) AS hraw
-      FROM lns_rel
-    )
-    SELECT s.period, s.share_micro,
-           -- hraw is share_micro * ln_micro = 1e12 * (p ln p); micro
-           -- output divides by 1e6 ONLY (the dow-hour cancel trap)
-           CAST({hd('e.hraw', '1000000::HUGEINT')} AS BIGINT)
-             AS spectral_entropy_micro
-    FROM shares s, ent e ORDER BY s.period
-    """
-
-
-@register("events_spectral_entropy_periods", _spectral_oracle())
-def events_spectral_entropy_periods(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spectral ENTROPY of the fixed-period periodogram: normalize the
-    (7, 30, 91)-day spectral powers of the daily order-count series to
-    shares, then H = -sum p ln p — the scalar "is the calendar signal
-    concentrated in one period or smeared" companion of
-    ``events_periodogram_fixed_periods`` (which reports the shares;
-    low entropy = one dominant cycle worth a seasonal model, high =
-    no single period explains the variance). Reuses the periodogram's
-    quantized trig tables verbatim (the shared-derivation rule).
-
-    Exactness: powers sc^2+ss^2 are exact integers; shares half-up
-    micro-quantize against the total; ln terms are the shared
-    deterministic fixed-point ln of the micro shares (ln p = ln
-    share_micro - ln 1e6, with ln 1e6 the fixed 13815511 micro
-    literal), so H accumulates as exact integer products.
-    """
-    from ..functions.detmath import det_ln_q
-    from .roundeleven import PGRAM_COSQ, PGRAM_PERIODS, PGRAM_SINQ
-
-    t = Tables(spark, sf_dir)
-    daily = t.orders.groupBy(F.to_date("o_orderdate").alias("day")).agg(
-        F.count(F.lit(1)).cast("long").alias("y")
-    )
-    b0 = daily.select(F.col("day").alias("day_b"))
-    idx = (
-        daily.join(F.broadcast(b0), F.col("day_b") <= F.col("day"))
-        .groupBy("day", "y")
-        .agg(F.count(F.lit(1)).cast("long").alias("k"))
-    )
-    tot = idx.agg(
-        dec38(F.count(F.lit(1))).alias("n"), dec38(F.sum("y")).alias("s")
-    )
-    cent = idx.crossJoin(F.broadcast(tot)).select(
-        "k", (F.col("n") * F.col("y") - F.col("s")).alias("z")
-    )
-    vecs = None
-    for p in PGRAM_PERIODS:
-        cosv = F.array(*[F.lit(v) for v in PGRAM_COSQ[p]])
-        sinv = F.array(*[F.lit(v) for v in PGRAM_SINQ[p]])
-        part = cent.select(
-            F.lit(p).cast("long").alias("period"),
-            (F.col("z") * F.element_at(cosv, ((F.col("k") - 1) % p + 1).cast("int")).cast("decimal(38,0)")).alias("zc"),
-            (F.col("z") * F.element_at(sinv, ((F.col("k") - 1) % p + 1).cast("int")).cast("decimal(38,0)")).alias("zs"),
-        ).groupBy("period").agg(F.sum("zc").alias("sc"), F.sum("zs").alias("ss"))
-        vecs = part if vecs is None else vecs.unionAll(part)
-    pw = vecs.select(
-        "period", (F.col("sc") * F.col("sc") + F.col("ss") * F.col("ss")).alias("p")
-    )
-    tp = pw.agg(F.sum("p").alias("tpw"))
-    m6 = F.lit(1_000_000).cast("decimal(38,0)")
-    shares = (
-        pw.crossJoin(F.broadcast(tp))
-        .filter(F.col("tpw") > 0)
-        .select(
-            "period",
-            halfup_div(m6 * F.col("p"), F.col("tpw")).cast("long").alias("share_micro"),
-        )
-    )
-    LN_1E6_MICRO = 13_815_511  # det-ln(1e6) micro literal, shared
-    ent = shares.filter(F.col("share_micro") > 0).select(
-        (
-            dec38(F.col("share_micro"))
-            * (F.lit(LN_1E6_MICRO).cast("decimal(38,0)") - det_ln_q(F.col("share_micro")))
-        ).alias("hterm")
-    ).agg(F.sum("hterm").alias("hraw"))
-    return (
-        shares.crossJoin(F.broadcast(ent))
-        .select(
-            "period",
-            "share_micro",
-            halfup_div(F.col("hraw"), F.lit(10**6).cast("decimal(38,0)"))
-            .cast("long")
-            .alias("spectral_entropy_micro"),
-        )
-        .orderBy("period")
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -17,8 +17,9 @@ before design (the SCALE §5j.7 authoring rule):
   Nanopoulos & Ivanovic 2010).
 * ``stats_lin_ccc_reconciliation`` — Lin's concordance correlation
   (1989) between the order header total and the line-derived total.
-* ``stats_diebold_mariano_daily`` — Diebold–Mariano forecast
-  comparison (1995) of naive vs seasonal-naive on the daily series.
+
+``stats_diebold_mariano_daily`` lives in
+``operators/daily_hypothesis.py`` with the other daily-series queries.
 
 Reference parity note: the reference (Go ingestion pipeline,
 ``/root/reference/main.go``) has no analytics; these extend SURVEY
@@ -614,115 +615,4 @@ def stats_lin_ccc_reconciliation(spark: SparkSession, sf_dir: str) -> DataFrame:
                 den,
             ).cast("long"),
         ).alias("ccc_micro"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# 5. Diebold–Mariano: naive vs seasonal-naive daily forecasts
-# ---------------------------------------------------------------------------
-
-DM_SEASON = 7
-
-
-def _dm_oracle() -> str:
-    from .roundeleven2 import _SQL_DAILY_COUNTS_IDX
-
-    hd = sql_halfup_div
-    s = DM_SEASON
-    return f"""
-    WITH {_SQL_DAILY_COUNTS_IDX}
-    , pairs AS (
-      SELECT a.k, a.y,
-             (a.y - n1.y) * (a.y - n1.y) AS l_naive,
-             (a.y - n7.y) * (a.y - n7.y) AS l_seasonal
-      FROM idx a
-      JOIN idx n1 ON n1.k = a.k - 1
-      JOIN idx n7 ON n7.k = a.k - {s}
-    ), d AS (
-      SELECT CAST(count(*) AS HUGEINT) AS n,
-             CAST(sum(l_naive) AS HUGEINT) AS sl1,
-             CAST(sum(l_seasonal) AS HUGEINT) AS sl7,
-             CAST(sum(l_naive - l_seasonal) AS HUGEINT) AS sd,
-             CAST(sum((l_naive - l_seasonal) * (l_naive - l_seasonal))
-                  AS HUGEINT) AS sdd
-      FROM pairs
-    )
-    SELECT CAST(n AS BIGINT) AS n_eval_days,
-           CAST(sl1 AS BIGINT) AS sum_loss_naive,
-           CAST(sl7 AS BIGINT) AS sum_loss_seasonal,
-           CASE WHEN n * sdd - sd * sd > 0 THEN
-             CAST({hd('1000000::HUGEINT * sd * sd', 'n * sdd - sd * sd')}
-                  AS BIGINT) * CAST(n AS BIGINT)
-             * (CASE WHEN sd < 0 THEN -1 ELSE 1 END)
-           END AS dm_z_sq_signed_micro
-    FROM d
-    """
-
-
-@register("stats_diebold_mariano_daily", oracle=_dm_oracle())
-def stats_diebold_mariano_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Diebold–Mariano forecast-comparison test (1995) on the daily
-    order counts: naive (yesterday's value) vs seasonal-naive (same
-    weekday last week) one-step forecasts under squared-error loss;
-    DM^2 = n dbar^2 / Var(d) over the loss differentials d_t (lag-0
-    variance — the one-step-ahead case where DM's HAC correction
-    vanishes). The FORECAST-selection member of the series shelf:
-    Holt/Bass/STL fit models, Brier-skill scores probabilities — DM
-    is the significance test that says whether the seasonal model's
-    apparent edge over persistence survives sampling noise, i.e.
-    whether weekly seasonality is worth a forecasting dependency.
-    Positive sign = seasonal-naive wins (naive's loss is larger).
-
-    Exactness: losses and differentials are exact integers off the
-    calendar-rank lag joins; DM^2 = n (sum d)^2 / (n sum d^2 -
-    (sum d)^2) is ONE half-up micro division times the exact n,
-    signed by the mean differential, NULL-guarded for the
-    identical-forecast degenerate.
-
-    Scale shape: one fact scan to the ~2.4k-day table; two rank
-    equi-joins; one sufficient-sum aggregate.
-    """
-    from .roundeleven2 import _daily_counts_idx
-
-    t = Tables(spark, sf_dir)
-    idx = _daily_counts_idx(t)
-    a = idx.select(F.col("k").alias("ka"), F.col("y").alias("ya"))
-    n1 = idx.select(F.col("k").alias("k1"), F.col("y").alias("y1"))
-    n7 = idx.select(F.col("k").alias("k7"), F.col("y").alias("y7"))
-    pairs = (
-        a.join(n1, F.col("k1") == F.col("ka") - 1)
-        .join(n7, F.col("k7") == F.col("ka") - DM_SEASON)
-        .select(
-            ((F.col("ya") - F.col("y1")) * (F.col("ya") - F.col("y1"))).alias(
-                "l_naive"
-            ),
-            ((F.col("ya") - F.col("y7")) * (F.col("ya") - F.col("y7"))).alias(
-                "l_seasonal"
-            ),
-        )
-    )
-    d = pairs.agg(
-        dec38(F.count(F.lit(1))).alias("n"),
-        F.sum("l_naive").alias("sl1"),
-        F.sum("l_seasonal").alias("sl7"),
-        F.sum(F.col("l_naive") - F.col("l_seasonal")).alias("sd"),
-        F.sum(
-            (F.col("l_naive") - F.col("l_seasonal"))
-            * (F.col("l_naive") - F.col("l_seasonal"))
-        ).alias("sdd"),
-    )
-    m6 = F.lit(1_000_000).cast("decimal(38,0)")
-    var = F.col("n") * F.col("sdd") - F.col("sd") * F.col("sd")
-    return d.select(
-        F.col("n").cast("long").alias("n_eval_days"),
-        F.col("sl1").cast("long").alias("sum_loss_naive"),
-        F.col("sl7").cast("long").alias("sum_loss_seasonal"),
-        F.when(
-            var > 0,
-            halfup_div(m6 * F.col("sd") * F.col("sd"), var).cast("long")
-            * F.col("n").cast("long")
-            * F.when(F.col("sd") < 0, F.lit(-1)).otherwise(F.lit(1)),
-        )
-        .cast("long")
-        .alias("dm_z_sq_signed_micro"),
     )

@@ -18,6 +18,9 @@ was checked against the full registry inventory before design (the
 Reference parity note: the reference (Go ingestion pipeline) has no
 analytics; these extend SURVEY §2.C warehouse statistics / corpus
 management / ML governance.
+
+``stats_cochrane_orcutt_trend`` lives in
+``operators/daily_hypothesis.py`` with the other daily-series queries.
 """
 
 from __future__ import annotations
@@ -217,169 +220,6 @@ def stats_eb_beta_binomial_shrinkage(spark: SparkSession, sf_dir: str) -> DataFr
         shrunk.cast("long").alias("shrunk_micro"),
         weight.cast("long").alias("prior_weight_milli"),
     ).orderBy("nation")
-
-
-# ---------------------------------------------------------------------------
-# 2. Cochrane–Orcutt AR(1)-corrected trend on daily counts
-# ---------------------------------------------------------------------------
-
-CO_RES_SCALE = 100  # centi residuals, the Breusch-Pagan convention
-
-
-def _co_oracle() -> str:
-    hd = sql_halfup_div
-    return f"""
-    WITH daily AS (
-      SELECT CAST(o_orderdate AS DATE) AS day, CAST(count(*) AS HUGEINT) AS y
-      FROM orders GROUP BY 1
-    ), idx AS (
-      SELECT a.day, a.y, CAST(count(*) AS HUGEINT) AS k
-      FROM daily a JOIN daily b ON b.day <= a.day
-      GROUP BY a.day, a.y
-    ), s1 AS (
-      SELECT CAST(count(*) AS HUGEINT) AS n,
-             CAST(sum(k) AS HUGEINT) AS sk,
-             CAST(sum(k * k) AS HUGEINT) AS skk,
-             CAST(sum(y) AS HUGEINT) AS sy,
-             CAST(sum(k * y) AS HUGEINT) AS sky
-      FROM idx
-    ), coef AS (
-      SELECT n, sk, sy,
-             (n * skk - sk * sk) AS d, (n * sky - sk * sy) AS b
-      FROM s1
-    ), resid AS (
-      SELECT i.k, i.y,
-             {hd(f'{CO_RES_SCALE}::HUGEINT * '
-                 '(c.n * c.d * i.y - c.d * c.sy + c.b * c.sk - c.n * c.b * i.k)',
-                 'c.n * c.d')} AS u
-      FROM idx i, coef c
-    ), rho AS (
-      SELECT {hd('1000000::HUGEINT * CAST((SELECT sum(a.u * b.u) FROM resid a '
-                 'JOIN resid b ON b.k = a.k - 1) AS HUGEINT)',
-                 'CAST((SELECT sum(u * u) FROM resid) AS HUGEINT)')} AS rho_micro
-      FROM (SELECT 1)
-    ), trans AS (
-      SELECT (1000000::HUGEINT * a.y - r.rho_micro * b.y) AS ys,
-             (1000000::HUGEINT * a.k - r.rho_micro * (a.k - 1)) AS xs
-      FROM resid a JOIN resid b ON b.k = a.k - 1, rho r
-    ), s2 AS (
-      SELECT CAST(count(*) AS HUGEINT) AS m,
-             CAST(sum(xs) AS HUGEINT) AS sx,
-             CAST(sum(xs * xs) AS HUGEINT) AS sxx,
-             CAST(sum(ys) AS HUGEINT) AS syt,
-             CAST(sum(xs * ys) AS HUGEINT) AS sxy
-      FROM trans
-    )
-    SELECT CAST(c.n AS BIGINT) AS n_days,
-           CAST(r.rho_micro AS BIGINT) AS rho_micro,
-           CAST({hd('1000000::HUGEINT * c.b', 'c.d')} AS BIGINT)
-             AS ols_slope_micro,
-           CAST({hd('1000000::HUGEINT * (s2.m * s2.sxy - s2.sx * s2.syt)',
-                    's2.m * s2.sxx - s2.sx * s2.sx')} AS BIGINT)
-             AS co_slope_micro
-    FROM coef c, rho r, s2
-    """
-
-
-@register("stats_cochrane_orcutt_trend", _co_oracle())
-def stats_cochrane_orcutt_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cochrane–Orcutt AR(1)-corrected trend estimate on the daily
-    order-count series: estimate rho from the lag-1 autocorrelation of
-    the OLS residuals, quasi-difference (y_t - rho y_{t-1} on
-    x_t - rho x_{t-1}), and re-fit — the FIX step the residual-
-    diagnostic suite points at (``stats_durbin_watson_daily`` detects
-    the autocorrelation that makes plain OLS standard errors wrong;
-    this delivers the corrected slope). Reporting both slopes side by
-    side shows how much the naive trend moves once serial correlation
-    is absorbed.
-
-    Exactness: residuals quantize ONCE at centi resolution off exact
-    integer numerators (the Breusch-Pagan convention); rho is ONE
-    half-up 1e-6 ratio of exact integer lag products; the transformed
-    series is exact integers (1e6-scaled quasi-differences with the
-    integer rho); both slopes are single half-up big-integer ratios.
-
-    Scale shape: one fact scan to the ~2.4k-day table; the lag pairing
-    is a rank equi-join on the calendar-bounded index; two 5-number
-    sufficient-sum aggregates.
-    """
-    t = Tables(spark, sf_dir)
-    daily = t.orders.groupBy(F.to_date("o_orderdate").alias("day")).agg(
-        dec38(F.count(F.lit(1))).alias("y")
-    )
-    b0 = daily.select(F.col("day").alias("day_b"))
-    idx = (
-        daily.join(F.broadcast(b0), F.col("day_b") <= F.col("day"))
-        .groupBy("day", "y")
-        .agg(dec38(F.count(F.lit(1))).alias("k"))
-    )
-    s1 = idx.agg(
-        dec38(F.count(F.lit(1))).alias("n"),
-        F.sum("k").alias("sk"),
-        F.sum(F.col("k") * F.col("k")).alias("skk"),
-        F.sum("y").alias("sy"),
-        F.sum(F.col("k") * F.col("y")).alias("sky"),
-    )
-    coef = s1.select(
-        "n",
-        "sk",
-        "sy",
-        (F.col("n") * F.col("skk") - F.col("sk") * F.col("sk")).alias("d"),
-        (F.col("n") * F.col("sky") - F.col("sk") * F.col("sy")).alias("b"),
-    )
-    rnum = (
-        F.col("n") * F.col("d") * F.col("y")
-        - F.col("d") * F.col("sy")
-        + F.col("b") * F.col("sk")
-        - F.col("n") * F.col("b") * F.col("k")
-    )
-    resid = idx.crossJoin(F.broadcast(coef)).select(
-        "k",
-        "y",
-        halfup_div(
-            F.lit(CO_RES_SCALE).cast("decimal(38,0)") * rnum, F.col("n") * F.col("d")
-        ).alias("u"),
-    )
-    lagged = resid.select(
-        (F.col("k") + 1).alias("k"), F.col("u").alias("up"), F.col("y").alias("yp")
-    )
-    paired = resid.join(lagged, "k")
-    rho = (
-        paired.agg(F.sum(F.col("u") * F.col("up")).alias("num"))
-        .crossJoin(F.broadcast(resid.agg(F.sum(F.col("u") * F.col("u")).alias("den"))))
-        .select(
-            halfup_div(
-                F.lit(1_000_000).cast("decimal(38,0)") * F.col("num"), F.col("den")
-            ).alias("rho_micro")
-        )
-    )
-    m6 = F.lit(1_000_000).cast("decimal(38,0)")
-    trans = paired.crossJoin(F.broadcast(rho)).select(
-        (m6 * F.col("y") - F.col("rho_micro") * F.col("yp")).alias("ys"),
-        (m6 * F.col("k") - F.col("rho_micro") * (F.col("k") - 1)).alias("xs"),
-    )
-    s2 = trans.agg(
-        dec38(F.count(F.lit(1))).alias("m"),
-        F.sum("xs").alias("sx"),
-        F.sum(F.col("xs") * F.col("xs")).alias("sxx"),
-        F.sum("ys").alias("syt"),
-        F.sum(F.col("xs") * F.col("ys")).alias("sxy"),
-    )
-    return (
-        coef.crossJoin(F.broadcast(rho))
-        .crossJoin(F.broadcast(s2))
-        .select(
-            F.col("n").cast("long").alias("n_days"),
-            F.col("rho_micro").cast("long").alias("rho_micro"),
-            halfup_div(m6 * F.col("b"), F.col("d")).cast("long").alias("ols_slope_micro"),
-            halfup_div(
-                m6 * (F.col("m") * F.col("sxy") - F.col("sx") * F.col("syt")),
-                F.col("m") * F.col("sxx") - F.col("sx") * F.col("sx"),
-            )
-            .cast("long")
-            .alias("co_slope_micro"),
-        )
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -18,8 +18,9 @@ before design (the SCALE §5j.7 authoring rule):
   extreme-alternating rank-run sums.
 * ``stats_conover_squared_ranks`` — squared-ranks dispersion test
   across return-flag groups (the rank ANOVA for variances).
-* ``stats_cox_stuart_trend_daily`` — half-offset paired sign trend
-  test on the daily order series.
+
+``stats_cox_stuart_trend_daily`` lives in
+``operators/daily_hypothesis.py`` with the other daily-series queries.
 
 Reference parity note: the reference (Go ingestion pipeline,
 ``/root/reference/main.go``) has no analytics; these extend SURVEY
@@ -765,120 +766,4 @@ def stats_conover_squared_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
     return tot.select(
         F.col("n").cast("long").alias("n_items"),
         F.when(qa * nn - sa * sa > 0, tmicro).alias("conover_t_micro"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# 6. Cox–Stuart trend test on daily order counts
-# ---------------------------------------------------------------------------
-
-
-def _cox_stuart_oracle() -> str:
-    hd = sql_halfup_div
-    return f"""
-    WITH daily AS (
-      SELECT CAST(o_orderdate AS DATE) AS day, CAST(count(*) AS BIGINT) AS y
-      FROM orders GROUP BY 1
-    ), idx AS (
-      SELECT a.day, a.y, CAST(count(*) AS BIGINT) AS k
-      FROM daily a JOIN daily b ON b.day <= a.day
-      GROUP BY a.day, a.y
-    ), nn AS (
-      SELECT CAST(count(*) AS BIGINT) AS n,
-             (CAST(count(*) AS BIGINT) + 1) // 2 AS c
-      FROM idx
-    ), pairs AS (
-      SELECT CASE WHEN b.y > a.y THEN 1 ELSE 0 END AS pos,
-             CASE WHEN b.y < a.y THEN 1 ELSE 0 END AS neg
-      FROM idx a
-      JOIN nn ON a.k <= nn.n - nn.c
-      JOIN idx b ON b.k = a.k + nn.c
-    ), s AS (
-      SELECT CAST(count(*) AS BIGINT) AS n_pairs,
-             CAST(sum(pos) AS BIGINT) AS n_pos,
-             CAST(sum(neg) AS BIGINT) AS n_neg
-      FROM pairs
-    )
-    SELECT (SELECT CAST(n AS BIGINT) FROM nn) AS n_days,
-           n_pairs, n_pos, n_neg,
-           CASE WHEN n_pos + n_neg > 0 THEN
-             CAST({hd('1000000::HUGEINT * (n_pos - n_neg) * (n_pos - n_neg)',
-                      'n_pos + n_neg')} AS BIGINT)
-             * (CASE WHEN n_pos < n_neg THEN -1 ELSE 1 END)
-           END AS cs_z_sq_signed_micro
-    FROM s
-    """
-
-
-@register("stats_cox_stuart_trend_daily", oracle=_cox_stuart_oracle())
-def stats_cox_stuart_trend_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cox–Stuart trend test (1955) on the daily order-count series:
-    pair day i with day i + ceil(n/2) (the middle day drops out when n
-    is odd), score each pair by sign, and run the binomial sign test on
-    the m informative pairs — sign(S)*Z^2 = sign * (n_pos - n_neg)^2/m
-    in the house exact form. The assumption-free member of the trend
-    shelf: ``stats_mann_kendall_daily`` weighs ALL O(n^2) pairs,
-    ``stats_theil_sen_trend`` estimates the slope, Cox–Stuart is the
-    sign-only screen whose null is exactly Binomial(m, 1/2) under any
-    exchangeable noise — the first test a reviewer runs before
-    trusting either of the others.
-
-    Exactness: day indexing uses the calendar-bounded <=-rank self-join
-    (house pattern, exact integer k); the half-offset pairing is an
-    equi-join on k = k + c; counts and the final signed ratio are exact
-    integers with one half-up micro division, NULL-guarded for the
-    all-ties degenerate.
-
-    Scale shape: one fact scan partial-aggregating to the ~2.4k-day
-    table; the rank join and the offset join are day-domain-bounded;
-    one scalar row out.
-    """
-    t = Tables(spark, sf_dir)
-    daily = t.orders.groupBy(F.to_date("o_orderdate").alias("day")).agg(
-        F.count(F.lit(1)).alias("y")
-    )
-    b0 = daily.select(F.col("day").alias("day_b"))
-    idx = (
-        daily.join(F.broadcast(b0), F.col("day_b") <= F.col("day"))
-        .groupBy("day", "y")
-        .agg(F.count(F.lit(1)).cast("long").alias("k"))
-    )
-    nn = idx.agg(F.count(F.lit(1)).cast("long").alias("n")).select(
-        "n", F.floor((F.col("n") + 1) / 2).cast("long").alias("c")
-    )
-    a = idx.select(F.col("k").alias("ka"), F.col("y").alias("ya"))
-    bb = idx.select(F.col("k").alias("kb"), F.col("y").alias("yb"))
-    pairs = (
-        a.crossJoin(F.broadcast(nn))
-        .filter(F.col("ka") <= F.col("n") - F.col("c"))
-        .join(bb, F.col("kb") == F.col("ka") + F.col("c"))
-    )
-    s = pairs.agg(
-        F.count(F.lit(1)).cast("long").alias("n_pairs"),
-        F.sum(F.when(F.col("yb") > F.col("ya"), 1).otherwise(0))
-        .cast("long")
-        .alias("n_pos"),
-        F.sum(F.when(F.col("yb") < F.col("ya"), 1).otherwise(0))
-        .cast("long")
-        .alias("n_neg"),
-    )
-    m6 = F.lit(1_000_000).cast("decimal(38,0)")
-    diff = F.col("n_pos") - F.col("n_neg")
-    m = F.col("n_pos") + F.col("n_neg")
-    return (
-        nn.select("n")
-        .crossJoin(F.broadcast(s))
-        .select(
-            F.col("n").alias("n_days"),
-            "n_pairs",
-            "n_pos",
-            "n_neg",
-            F.when(
-                m > 0,
-                halfup_div(m6 * dec38(diff) * dec38(diff), dec38(m)).cast("long")
-                * F.when(diff < 0, F.lit(-1)).otherwise(F.lit(1)),
-            )
-            .cast("long")
-            .alias("cs_z_sq_signed_micro"),
-        )
     )

@@ -77,6 +77,9 @@ def _ensure_loaded() -> None:
         advanced,
         bucketed,
         corpus,
+        daily_change,
+        daily_hypothesis,
+        daily_spectral,
         dedup,
         graph_centrality,
         graph_community,
@@ -98,7 +101,6 @@ def _ensure_loaded() -> None:
         roundeleven4,
         roundeleven5,
         roundeleven6,
-        roundeleven7,
         roundfive,
         roundfourteen,
         roundfourteen2,
@@ -118,7 +120,6 @@ def _ensure_loaded() -> None:
         roundten3,
         roundtenb,
         roundthirteen,
-        roundthirteen2,
         roundthirteen3,
         roundthirteen4,
         roundthirteen5,
@@ -133,7 +134,6 @@ def _ensure_loaded() -> None:
         roundtwelve4,
         roundtwelve5,
         roundtwelve6,
-        roundtwelve7,
         roundtwelve8,
         roundtwelve9,
         similarity,

@@ -124,10 +124,12 @@ def _in_order(
     each row whose ``key(order)`` is after ``last`` (the state's last
     processed day or week), advancing ``last`` as it goes. Rows at or
     before it are dropped and counted instead of being folded into the
-    integer recursion (ADVICE r8). Returns ``(kept, last, n_late)`` with
-    ``kept`` the in-order ``(key, int(value))`` pairs.
+    integer recursion (ADVICE r8). The sort is stable, so of a day that
+    repeats within the batch the first to arrive is the one kept.
+    Returns ``(kept, last, n_late)`` with ``kept`` the in-order
+    ``(key, int(value))`` pairs.
     """
-    rows = pd.concat(list(frames)).sort_values(order_col)
+    rows = pd.concat(list(frames)).sort_values(order_col, kind="stable")
     kept, n_late = [], 0
     for k, x in zip(rows[order_col], rows[value_col]):
         k = key(k)

@@ -73,8 +73,8 @@ def test_rbo_weight_table():
 
 
 def test_pgram_trig_tables():
-    """roundeleven.PGRAM_COSQ/SINQ[p][i] = round(1e3 cos/sin(2 pi i/p))."""
-    from mysql_public_data_ingestor_spark.operators.roundeleven import (
+    """daily_spectral.PGRAM_COSQ/SINQ[p][i] = round(1e3 cos/sin(2 pi i/p))."""
+    from mysql_public_data_ingestor_spark.operators.daily_spectral import (
         PGRAM_COSQ,
         PGRAM_PERIODS,
         PGRAM_SINQ,
@@ -92,7 +92,7 @@ def test_det_ln_literals():
     """LN_6_MICRO / LN_1E6_MICRO equal the deterministic fixed-point
     ln of their arguments AND sit within one quantum of libm."""
     from mysql_public_data_ingestor_spark.functions.detmath import ref_det_ln_q
-    from mysql_public_data_ingestor_spark.operators.roundtwelve7 import (
+    from mysql_public_data_ingestor_spark.operators.daily_spectral import (
         LN_1E6_MICRO,
         LN_6_MICRO,
     )

@@ -500,7 +500,7 @@ SINGLE_PARTITION_ALLOWLIST = {
     # deviation domain (50 quantity values x 3 group scalings) —
     # bounded by the value domain, never by rows.
     "stats_conover_squared_ranks",
-    # round-12 batch L (roundtwelve7.py): cumulative-path + running-
+    # round-12 batch L (now daily_change.py): cumulative-path + running-
     # peak windows over the POST-AGGREGATION ~2.4k-calendar-day series
     # (the stats_ljung_box_daily class; replaced a 27.5s chain of
     # three day^2 non-equi prefix joins).

@@ -322,7 +322,7 @@ def test_logrank_matches_python(spark, sf_dir, lineitem_pdf, orders_pdf):
 
 
 def test_ljung_box_matches_python(spark, sf_dir, orders_pdf):
-    from mysql_public_data_ingestor_spark.operators.roundeight3 import LB_MAX_LAG
+    from mysql_public_data_ingestor_spark.operators.daily_hypothesis import LB_MAX_LAG
 
     got = _q("stats_ljung_box_daily", spark, sf_dir).sort_values("lag").reset_index(drop=True)
     daily = orders_pdf.groupby("o_orderdate").size().sort_index()

@@ -11,6 +11,7 @@ import math
 
 import pytest
 
+from mysql_public_data_ingestor_spark.operators import daily_spectral
 from mysql_public_data_ingestor_spark.operators import graph_paths
 from mysql_public_data_ingestor_spark.operators import roundeleven
 from mysql_public_data_ingestor_spark.registry import all_queries
@@ -531,14 +532,14 @@ def test_periodogram_matches_python(spark, sf_dir):
     s = sum(ys)
     zs = [n * y - s for y in ys]
     zyy = sum(z * z for z in zs)
-    assert list(got["period"]) == sorted(roundeleven.PGRAM_PERIODS)
+    assert list(got["period"]) == sorted(daily_spectral.PGRAM_PERIODS)
     for _, row in got.iterrows():
         p = int(row["period"])
         sc = sum(
-            z * roundeleven.PGRAM_COSQ[p][k % p] for k, z in enumerate(zs)
+            z * daily_spectral.PGRAM_COSQ[p][k % p] for k, z in enumerate(zs)
         )
         ss = sum(
-            z * roundeleven.PGRAM_SINQ[p][k % p] for k, z in enumerate(zs)
+            z * daily_spectral.PGRAM_SINQ[p][k % p] for k, z in enumerate(zs)
         )
         assert int(row["n_days"]) == n
         assert row["variance_share"] == _half_up(

@@ -12,6 +12,7 @@ from collections import defaultdict
 import pytest
 
 from mysql_public_data_ingestor_spark.operators import graph_paths
+from mysql_public_data_ingestor_spark.operators import daily_spectral
 from mysql_public_data_ingestor_spark.operators import roundeleven2 as r112
 from mysql_public_data_ingestor_spark.tables import Tables
 from tools.check_correctness import compare, duck_connection
@@ -205,7 +206,7 @@ def test_pacf_matches_python_and_numpy(spark, sf_dir):
     s = sum(ys)
     xs = [n * y - s for y in ys]
     c = [sum(a * b for a, b in zip(xs, xs[k:])) for k in range(4)]
-    M = r112.PACF_M
+    M = daily_spectral.PACF_M
     r1 = _halfup_int(M * c[1], c[0])
     r2 = _halfup_int(M * c[2], c[0])
     r3 = _halfup_int(M * c[3], c[0])

@@ -8,7 +8,7 @@ from __future__ import annotations
 
 from collections import defaultdict
 
-from mysql_public_data_ingestor_spark.operators import roundeleven7 as r117
+from mysql_public_data_ingestor_spark.operators.daily import BP_RES_SCALE
 from mysql_public_data_ingestor_spark.tables import Tables
 from tools.check_correctness import compare, duck_connection
 
@@ -72,7 +72,7 @@ def test_bp_matches_python(spark, sf_dir):
     b = n * sky - sk * sy
     us = [
         _halfup_int(
-            r117.BP_RES_SCALE * (n * d * y - d * sy + b * sk - n * b * k), n * d
+            BP_RES_SCALE * (n * d * y - d * sy + b * sk - n * b * k), n * d
         )
         for k, y in zip(ks, ys)
     ]

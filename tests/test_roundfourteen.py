@@ -88,7 +88,7 @@ def _q(name):
 
 def test_spectral_flatness_matches_python(spark, sf_dir):
     from mysql_public_data_ingestor_spark.functions.detmath import ref_det_ln_q
-    from mysql_public_data_ingestor_spark.operators.roundeleven import (
+    from mysql_public_data_ingestor_spark.operators.daily_spectral import (
         PGRAM_COSQ,
         PGRAM_PERIODS,
         PGRAM_SINQ,

@@ -45,14 +45,14 @@ QUERIES = [
 
 
 def test_queue_is_registered_with_oracles():
-    """All 19 roundnine.py queries reach ``__spark_entry__.oracle_sql()``, each with
+    """All 18 roundnine.py queries reach ``__spark_entry__.oracle_sql()``, each with
     its oracle."""
     import __spark_entry__ as entry
 
     names = {
         s.name for s in all_queries().values() if s.fn.__module__ == roundnine.__name__
     }
-    assert len(names) == 19
+    assert len(names) == 18
     missing = names - set(entry.oracle_sql())
     assert not missing, f"registered without oracle: {missing}"
 

@@ -19,6 +19,7 @@ from mysql_public_data_ingestor_spark.operators import (
     graph_paths,
     graph_structure,
 )
+from mysql_public_data_ingestor_spark.operators import daily_change
 from mysql_public_data_ingestor_spark.operators import roundnine
 from mysql_public_data_ingestor_spark.registry import all_queries
 from mysql_public_data_ingestor_spark.tables import Tables
@@ -272,7 +273,7 @@ def test_page_hinkley_matches_python(spark, sf_dir, orders_pdf):
     ph = []
     cur_min = None
     for v in x:
-        m += 1000 * n * v - 1000 * s - roundnine.PH_DELTA_MILLI * n
+        m += 1000 * n * v - 1000 * s - daily_change.PH_DELTA_MILLI * n
         cur_min = m if cur_min is None else min(cur_min, m)
         ph.append(m - cur_min)
     ph_max = max(ph)

@@ -11,6 +11,7 @@ import math
 import pytest
 
 from mysql_public_data_ingestor_spark.operators import graph_paths
+from mysql_public_data_ingestor_spark.operators import daily_hypothesis
 from mysql_public_data_ingestor_spark.operators import roundten2
 from mysql_public_data_ingestor_spark.tables import Tables
 from tools.check_correctness import compare, duck_connection
@@ -388,7 +389,7 @@ def test_variance_ratio_matches_python(spark, sf_dir, orders_pdf=None):
     bymap = {d: int(x) for d, x in daily.items()}
     import datetime
 
-    q = roundten2.VR_Q
+    q = daily_hypothesis.VR_Q
     d1 = [
         bymap[d] - bymap[d - datetime.timedelta(days=1)]
         for d in bymap

@@ -10,6 +10,7 @@ import math
 
 import pytest
 
+from mysql_public_data_ingestor_spark.operators import daily_change, daily_spectral
 from mysql_public_data_ingestor_spark.operators import roundten3
 from mysql_public_data_ingestor_spark.tables import Tables
 from tools.check_correctness import compare, duck_connection
@@ -163,7 +164,7 @@ def test_hurst_matches_python(spark, sf_dir):
     ys = [v for _, v in _daily_orders(spark, sf_dir, "count")]
     n = len(ys)
     per_size = {}
-    for s in roundten3.HURST_SIZES:
+    for s in daily_spectral.HURST_SIZES:
         ms = []
         for blk in range(n // s):
             block = ys[blk * s : (blk + 1) * s]
@@ -646,7 +647,7 @@ def test_control_chart_matches_python(spark, sf_dir):
         if (n * c - s) ** 2 > 9 * s * n
     ]
     viol.sort(key=lambda r: (-r[2], r[0]))
-    top = viol[: roundten3.CCHART_TOPK]
+    top = viol[: daily_change.CCHART_TOPK]
     assert len(got) == len(top)
     for (_, row), (d, c, dev2, side) in zip(got.iterrows(), top):
         assert row["day"].date() == d

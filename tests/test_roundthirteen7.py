@@ -13,7 +13,8 @@ from itertools import combinations
 
 import pytest
 
-from mysql_public_data_ingestor_spark.operators import graph_centrality
+from mysql_public_data_ingestor_spark.functions.detmath import LN2_MICRO
+from mysql_public_data_ingestor_spark.operators import daily_spectral, graph_centrality
 from mysql_public_data_ingestor_spark.operators import roundthirteen7 as r137
 from mysql_public_data_ingestor_spark.tables import Tables
 from tools.check_correctness import compare, duck_connection
@@ -48,7 +49,7 @@ def test_ln2_constant_anchor():
     """LN2_MICRO re-derived from its mathematical definition with
     arithmetic sharing nothing with the module (the SCALE §5n
     independent-anchor rule)."""
-    assert r137.LN2_MICRO == int(math.log(2) * 1e6 + 0.5) == 693147
+    assert LN2_MICRO == int(math.log(2) * 1e6 + 0.5) == 693147
 
 
 @pytest.mark.parametrize("name", NAMES)
@@ -301,7 +302,7 @@ def test_dfa_matches_python(spark, sf_dir):
         prof.append(nd * cum - k0 * s_tot)
     rows = {}
     lnf2 = {}
-    for s in r137.DFA_SCALES:
+    for s in daily_spectral.DFA_SCALES:
         nb = nd // s
         sres = 0
         for b in range(nb):
@@ -328,10 +329,10 @@ def test_dfa_matches_python(spark, sf_dir):
         rows[s] = (nb, int(math.floor(f2_dbl * 1000.0 + 0.5)))
         lnf2[s] = ref_det_ln_q(f2_dbl)
     coef = {8: -3, 16: -1, 32: 1, 64: 3}
-    csum = sum(coef[s] * lnf2[s] for s in r137.DFA_SCALES)
-    alpha = _halfup_int(1000 * csum, 20 * r137.LN2_MICRO)
+    csum = sum(coef[s] * lnf2[s] for s in daily_spectral.DFA_SCALES)
+    alpha = _halfup_int(1000 * csum, 20 * LN2_MICRO)
     got = _spec("events_dfa_daily").fn(spark, sf_dir).toPandas()
-    assert list(got["scale_days"]) == list(r137.DFA_SCALES)
+    assert list(got["scale_days"]) == list(daily_spectral.DFA_SCALES)
     for _, row in got.iterrows():
         nb, f2m = rows[int(row["scale_days"])]
         assert int(row["n_boxes"]) == nb
@@ -339,8 +340,8 @@ def test_dfa_matches_python(spark, sf_dir):
         assert int(row["alpha_milli"]) == alpha
     # float anchor: alpha from a float log-log regression on the same
     # 4 points (slope of ln F^2 on ln s, halved)
-    xs = [math.log(s) for s in r137.DFA_SCALES]
-    ys = [lnf2[s] / 1e6 for s in r137.DFA_SCALES]
+    xs = [math.log(s) for s in daily_spectral.DFA_SCALES]
+    ys = [lnf2[s] / 1e6 for s in daily_spectral.DFA_SCALES]
     xb = sum(xs) / 4
     yb = sum(ys) / 4
     slope = sum((a - xb) * (b - yb) for a, b in zip(xs, ys)) / sum(
@@ -348,5 +349,5 @@ def test_dfa_matches_python(spark, sf_dir):
     )
     assert abs(alpha / 1000 - slope / 2) < 2e-3
     # fluctuations grow with box size on a non-degenerate series
-    f2s = [rows[s][1] for s in r137.DFA_SCALES]
+    f2s = [rows[s][1] for s in daily_spectral.DFA_SCALES]
     assert f2s[0] <= f2s[-1]

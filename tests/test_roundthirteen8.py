@@ -14,6 +14,7 @@ from itertools import combinations
 import pytest
 
 from mysql_public_data_ingestor_spark.operators import graph_centrality
+from mysql_public_data_ingestor_spark.operators import daily_hypothesis
 from mysql_public_data_ingestor_spark.operators import roundthirteen8 as r138
 from mysql_public_data_ingestor_spark.tables import Tables
 from tools.check_correctness import compare, duck_connection
@@ -267,12 +268,12 @@ def test_qs_matches_python(spark, sf_dir):
     w = [m * zz - sz for zz in z]
     c0 = sum(x * x for x in w)
     cl = {}
-    for L in r138.QS_LAGS:
+    for L in daily_hypothesis.QS_LAGS:
         cl[L] = sum(w[j] * w[j + L] for j in range(m - L))
     got = _spec("events_qs_seasonality_test").fn(spark, sf_dir).toPandas().iloc[0]
     assert int(got["m"]) == m
     qs_terms = 0.0
-    for L in r138.QS_LAGS:
+    for L in daily_hypothesis.QS_LAGS:
         r_micro = int(
             math.floor(abs(float(cl[L]) / float(c0)) * 1e6 + 0.5)
         ) * (-1 if cl[L] < 0 else 1)
@@ -286,9 +287,9 @@ def test_qs_matches_python(spark, sf_dir):
     qs = int(math.floor(qs_terms * float(m * (m + 2)) * 1000.0 + 0.5))
     assert int(got["qs_milli"]) == qs
     # float anchor: the textbook Ljung-Box form at the two lags
-    rs = {L: cl[L] / c0 for L in r138.QS_LAGS}
-    qs_f = m * (m + 2) * sum(rs[L] ** 2 / (m - L) for L in r138.QS_LAGS)
+    rs = {L: cl[L] / c0 for L in daily_hypothesis.QS_LAGS}
+    qs_f = m * (m + 2) * sum(rs[L] ** 2 / (m - L) for L in daily_hypothesis.QS_LAGS)
     assert abs(qs / 1000 - qs_f) < 1e-2
     assert qs >= 0
-    for L in r138.QS_LAGS:
+    for L in daily_hypothesis.QS_LAGS:
         assert -(10**6) <= int(got[f"r{L}_micro"]) <= 10**6

@@ -12,6 +12,7 @@ from collections import Counter, defaultdict
 
 import pytest
 
+from mysql_public_data_ingestor_spark.operators import daily_hypothesis, daily_spectral
 from mysql_public_data_ingestor_spark.operators import roundthirteen9 as r139
 from mysql_public_data_ingestor_spark.tables import Tables
 from tools.check_correctness import compare, duck_connection
@@ -128,7 +129,7 @@ def test_sample_entropy_matches_python(spark, sf_dir):
                     a_cnt += 1
     got = _spec("events_sample_entropy_daily").fn(spark, sf_dir).toPandas().iloc[0]
     assert int(got["n_days"]) == n
-    assert int(got["m"]) == r139.SAMPEN_M
+    assert int(got["m"]) == daily_spectral.SAMPEN_M
     assert int(got["r_tol"]) == r
     assert int(got["b_pairs"]) == b_cnt
     assert int(got["a_pairs"]) == a_cnt
@@ -303,7 +304,7 @@ def test_ess_matches_python(spark, sf_dir):
     w = [m * yy - sy for yy in y]
     c0 = sum(x * x for x in w)
     csum = 0
-    for L in range(1, r139.ESS_MAX_LAG + 1):
+    for L in range(1, daily_hypothesis.ESS_MAX_LAG + 1):
         csum += sum(w[j] * w[j + L] for j in range(m - L))
     got = (
         _spec("stats_effective_sample_size_daily").fn(spark, sf_dir).toPandas().iloc[0]

@@ -84,7 +84,7 @@ def test_queue_plan_bars(spark, sf_dir):
 
 def test_spectral_entropy_matches_python(spark, sf_dir):
     from mysql_public_data_ingestor_spark.functions.detmath import ref_det_ln_q
-    from mysql_public_data_ingestor_spark.operators.roundeleven import (
+    from mysql_public_data_ingestor_spark.operators.daily_spectral import (
         PGRAM_COSQ,
         PGRAM_PERIODS,
         PGRAM_SINQ,

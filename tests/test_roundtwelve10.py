@@ -13,6 +13,7 @@ from collections import Counter, defaultdict
 
 import pytest
 
+from mysql_public_data_ingestor_spark.operators import daily_hypothesis
 from mysql_public_data_ingestor_spark.operators import roundtwelve10 as r1210
 from mysql_public_data_ingestor_spark.tables import Tables
 from tools.check_correctness import compare, duck_connection
@@ -268,7 +269,7 @@ def test_diebold_mariano_matches_python(spark, sf_dir):
         acc[v.date() if hasattr(v, "date") else v] += 1
     ys = [y for _, y in sorted(acc.items())]
     n_days = len(ys)
-    s = r1210.DM_SEASON
+    s = daily_hypothesis.DM_SEASON
     l1 = l7 = sd = sdd = 0
     cnt = 0
     for i in range(s, n_days):

@@ -96,7 +96,7 @@ def _stl_residuals_py(days):
 
 
 def test_stl_residual_periodogram_matches_python(spark, sf_dir):
-    from mysql_public_data_ingestor_spark.operators.roundeleven import (
+    from mysql_public_data_ingestor_spark.operators.daily_spectral import (
         PGRAM_COSQ,
         PGRAM_PERIODS,
         PGRAM_SINQ,
@@ -195,7 +195,7 @@ def _pattern_code(y0, y1, y2):
 
 def test_permutation_entropy_matches_python(spark, sf_dir):
     from mysql_public_data_ingestor_spark.functions.detmath import ref_det_ln_q
-    from mysql_public_data_ingestor_spark.operators.roundtwelve7 import LN_6_MICRO
+    from mysql_public_data_ingestor_spark.operators.daily_spectral import LN_6_MICRO
 
     assert ref_det_ln_q(6.0) == LN_6_MICRO
     ys = [y for _, y in _daily_counts(spark, sf_dir)]
@@ -266,7 +266,7 @@ def test_max_drawdown_matches_python(spark, sf_dir):
 
 
 def test_arch_lm_matches_python(spark, sf_dir):
-    from mysql_public_data_ingestor_spark.operators.roundeleven7 import BP_RES_SCALE
+    from mysql_public_data_ingestor_spark.operators.daily import BP_RES_SCALE
 
     days = _daily_counts(spark, sf_dir)
     n = len(days)

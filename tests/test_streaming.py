@@ -1583,6 +1583,34 @@ def test_monitor_adapters_off_spark(builder):
     assert tws_states == states
 
 
+@pytest.mark.parametrize("builder", ["cchart_monitor_per_type", "ewma_monitor_per_type"])
+def test_repeated_day_in_one_batch_folds_first_arrival(builder):
+    """A day that repeats inside one micro-batch is folded with the value
+    that arrived first; the later copies count as late. One 60-row frame
+    brings days 1-10 six times each in a fixed scattered order, each row's
+    value recording its arrival, so any unstable sort of the frame keeps
+    a later copy. Both adapters emit the same rows."""
+    arrivals = [(i * 7) % 10 + 1 for i in range(60)]
+    xs = [100 + 3 * i for i in range(60)]
+    frame = pd.DataFrame(
+        {
+            "event_type": ["click"] * 60,
+            "day": [_DAYS[d - 1] for d in arrivals],
+            "x": np.array(xs, dtype="int64"),
+        }
+    )
+    first = {}
+    for d, x in zip(arrivals, xs):
+        first.setdefault(d, x)
+    series = [(_DAYS[d - 1], x) for d, x in sorted(first.items())]
+    fold = {"cchart_monitor_per_type": _cchart_fold, "ewma_monitor_per_type": _ewma_fold}
+    batches = [{"click": [frame]}]
+    rows, _, _, _, _ = _drive(getattr(sw, builder)(_FakeFrame()), batches)
+    assert rows == [[("click", *fold[builder](series), 50)]]
+    tws_rows, _, _, _, _ = _drive(getattr(sw, builder + "_tws")(_FakeFrame()), batches)
+    assert tws_rows == rows
+
+
 def test_each_monitor_recursion_is_written_once():
     """The monitors share one applyInPandasWithState call, one
     transformWithStateInPandas call and one out-of-order guard."""

@@ -9,15 +9,28 @@ Usage:
       one ``<out_dir>/<query>_<suffix>.txt`` per named query, against
       SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) — run it with
       ``before`` on the parent checkout and ``after`` on the change to
-      pair an optimization's plans (``plans/r15/``).
+      pair an optimization's plans (``plans/r15/``);
+  python tools/dump_plans.py --manifest <out.json> [query ...]
+      the masked plan of each named query (default: every registered
+      query) as ``{name: {sha256, operators: {operator: count}}}``,
+      against SPARK_GRAFT_SF_DIR (required); build it on two checkouts
+      at the same scale and core count to compare them;
+  python tools/dump_plans.py --diff <a.json> <b.json>
+      the queries whose masked plan differs between two manifests, each
+      with its operator-count deltas (b minus a).
 """
 
 from __future__ import annotations
 
+import hashlib
+import json
 import os
+import re
 import sys
+from collections import Counter
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from mysql_public_data_ingestor_spark.plans import formatted_plan
 from mysql_public_data_ingestor_spark.registry import all_queries
@@ -209,6 +222,68 @@ def dump_pairs(suffix: str, out_dir: str, names: list[str]) -> None:
         print(f"wrote {name}_{suffix}.txt")
 
 
+# Tokens that differ between two builds of the same plan: expression ids
+# (``#123``, ``#45L``), the 12-hex fixture tag of a warehouse table, RDD
+# and plan ids, and the checkout the plan was built in.
+_VOLATILE = (
+    (re.compile(r"#\d+L?"), "#N"),
+    (re.compile(r"_[0-9a-f]{12}\b"), "_TAG"),
+    (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
+    (re.compile(r"plan_id=\d+"), "plan_id=N"),
+)
+_OPERATOR = re.compile(r"^\(\d+\) (\S.*?)(?: \[codegen id : \d+\])?\s*$", re.M)
+
+
+def mask_plan(plan: str) -> str:
+    """The plan with every build-specific token replaced by a constant."""
+    plan = plan.replace(ROOT, "<ROOT>")
+    for pattern, repl in _VOLATILE:
+        plan = pattern.sub(repl, plan)
+    return plan
+
+
+def plan_entry(plan: str) -> dict:
+    masked = mask_plan(plan)
+    return {
+        "sha256": hashlib.sha256(masked.encode()).hexdigest(),
+        "operators": dict(sorted(Counter(_OPERATOR.findall(masked)).items())),
+    }
+
+
+def write_manifest(out: str, names: list[str]) -> None:
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR")
+    if not sf_dir:
+        raise SystemExit("--manifest plans against SPARK_GRAFT_SF_DIR; set it")
+    spark = get_spark("dump_plans")
+    specs = all_queries()
+    manifest = {}
+    for name in names or sorted(specs):
+        manifest[name] = plan_entry(formatted_plan(specs[name].fn(spark, sf_dir)))
+        print(f"{name} {manifest[name]['sha256'][:12]}", flush=True)
+    with open(out, "w") as f:
+        json.dump(manifest, f, indent=1, sort_keys=True)
+        f.write("\n")
+
+
+def diff_manifests(a_path: str, b_path: str) -> None:
+    with open(a_path) as f:
+        a = json.load(f)
+    with open(b_path) as f:
+        b = json.load(f)
+    changed = 0
+    for name in sorted(a.keys() | b.keys()):
+        if name not in a or name not in b:
+            print(f"{name}: only in {a_path if name in a else b_path}")
+            changed += 1
+        elif a[name]["sha256"] != b[name]["sha256"]:
+            ops_a, ops_b = Counter(a[name]["operators"]), Counter(b[name]["operators"])
+            delta = {op: ops_b[op] - ops_a[op] for op in sorted(ops_a.keys() | ops_b.keys())}
+            moved = ", ".join(f"{op} {d:+d}" for op, d in delta.items() if d)
+            print(f"{name}: {moved or 'same operator counts'}")
+            changed += 1
+    print(f"{changed} of {len(a.keys() | b.keys())} plans changed")
+
+
 def dump_headline(sf_dir: str) -> None:
     spark = get_spark("dump_plans")
     specs = all_queries()
@@ -228,15 +303,18 @@ def dump_headline(sf_dir: str) -> None:
         out.append("```")
         out.append(formatted_plan(df).strip())
         out.append("```\n")
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    with open(os.path.join(root, "PLANS.md"), "w") as f:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print("PLANS.md written")
 
 
 def main() -> None:
     args = sys.argv[1:]
-    if len(args) >= 2:
+    if args[:1] == ["--manifest"]:
+        write_manifest(args[1], args[2:])
+    elif args[:1] == ["--diff"]:
+        diff_manifests(args[1], args[2])
+    elif len(args) >= 2:
         dump_pairs(args[0], args[1], args[2:])
     else:
         dump_headline(args[0] if args else "/root/testdata/sf0.1")
