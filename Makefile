@@ -1,7 +1,7 @@
 # Convenience targets (mirrors the reference's Makefile role:
 # build/test entry points — reference Makefile:26-46).
 
-.PHONY: test test-ingest check check-fast check-fuzz check-fuzzu check-fuzzs check-fuzzc bench bench-ingest perfbench-ingest plans
+.PHONY: test test-ingest check check-fast check-fuzz check-fuzzu check-fuzzs check-fuzzc bench bench-ingest perfbench-ingest plans manifest
 
 test:
 	python -m pytest tests/ -x -q
@@ -42,3 +42,6 @@ perfbench-ingest: ## ingest fan-out benchmark, end-to-end metrics (one seed)
 
 plans:        ## regenerate PLANS.md
 	python tools/dump_plans.py
+
+manifest:     ## masked-plan manifest of every query at 4 cores (plans/MANIFEST.json); set SPARK_GRAFT_SF_DIR to the sf0.01 fixture
+	SPARK_GRAFT_CPUS=4 python tools/dump_plans.py --manifest plans/MANIFEST.json

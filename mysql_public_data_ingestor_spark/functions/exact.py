@@ -121,6 +121,12 @@ def sql_round_big_int_ratio(num: str, den: str, dp: int = 6) -> str:
     return f"CAST(CASE WHEN ({num}) < 0 THEN -{mag} ELSE {mag} END AS BIGINT) / {float(s)}"
 
 
+def order_cents() -> Column:
+    """``o_totalprice`` in whole cents (half-up), a long — the per-row
+    quantization every order-value aggregate sums."""
+    return F.floor(F.col("o_totalprice") * F.lit(100.0) + F.lit(0.5)).cast("long")
+
+
 def dec38(c: Column) -> Column:
     """Cast to decimal(38,0), the exact-integer domain of the
     ``*_halfup_div`` and ``round_big_int_ratio`` helpers."""

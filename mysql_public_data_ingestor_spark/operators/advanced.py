@@ -16,6 +16,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.exact import order_cents
 from ..registry import register
 from ..tables import Tables
 
@@ -842,7 +843,7 @@ def mv_incremental_agg_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     (sum, count); percentiles would carry a sketch — same shape.)
     """
     t = Tables(spark, sf_dir)
-    cents = F.floor(F.col("o_totalprice") * 100.0 + F.lit(0.5)).cast("long")
+    cents = order_cents()
     cutoff = F.lit(MV_CUTOFF).cast("timestamp")
 
     def state(df):
@@ -918,7 +919,7 @@ def mv_incremental_join_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.broadcast(t.nation.select("n_nationkey", "n_name")),
         F.col("c_nationkey") == F.col("n_nationkey"),
     )
-    cents = F.floor(F.col("o_totalprice") * 100.0 + F.lit(0.5)).cast("long")
+    cents = order_cents()
 
     def enrich(orders):
         return orders.select("o_orderkey", "o_custkey", cents.alias("cents")).join(

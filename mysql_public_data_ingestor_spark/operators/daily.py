@@ -40,7 +40,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.exact import dec38, halfup_div, sql_halfup_div
+from ..functions.exact import dec38, halfup_div, order_cents, sql_halfup_div
 from ..tables import Tables
 from ..warehouse import ensure_table, fixture_tag
 
@@ -127,7 +127,7 @@ def _daily_cents_idx(t: Tables) -> DataFrame:
 
 def _daily_cents_idx_build(t: Tables) -> DataFrame:
     """(day, y=revenue-cents decimal, k) — the unmaterialized build."""
-    cents = F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")
+    cents = order_cents()
     return calendar_rank(day_series(t, dec38(F.sum(cents)).alias("y")))
 
 

@@ -11,6 +11,12 @@ Every operator keeps the house discipline: declarative DataFrame plans
 value crosses the engine boundary (functions/exact.py), partial
 aggregation to a bounded domain before any window or pair join, and a
 DuckDB oracle twin per query.
+
+``stats_cohens_d_priority`` and ``stats_levene_priority`` live in
+``operators/stats_models.py``; ``stats_trimmed_winsorized_price`` lives
+in ``operators/stats_dist.py``; ``stats_cochran_q_gates`` and
+``stats_mcnemar_quality_rules`` live in ``operators/stats_tables.py``
+with the other stats queries.
 """
 
 from __future__ import annotations
@@ -19,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions.exact import dec38
+from ..functions.exact import dec38, order_cents
 from ..registry import register
 from ..tables import Tables
 
@@ -136,7 +142,7 @@ def similarity_ivfpq_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame
 
 def _logit_quality_oracle() -> str:
     from ..functions.exact import sql_round_int_ratio
-    from .roundfive import logit_cte_chain
+    from .stats_models import logit_cte_chain
 
     ctes, w0, w1 = logit_cte_chain()
     p = f"1.0 / (1.0 + exp(-(({w0}) / 1000000.0 + ({w1}) / 1000000.0 * x)))"
@@ -185,7 +191,7 @@ def ml_logistic_fit_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     query via ``logit_weight_steps``).
     """
     from ..functions.exact import round_int_ratio
-    from .roundfive import logit_base, logit_sigmoid, logit_weight_steps
+    from .stats_models import logit_base, logit_sigmoid, logit_weight_steps
 
     t = Tables(spark, sf_dir)
     w = logit_weight_steps(t)[-1]
@@ -298,7 +304,7 @@ def sketch_fixedbin_quantile_merge(spark: SparkSession, sf_dir: str) -> DataFram
     midpoint column.
     """
     t = Tables(spark, sf_dir)
-    cents = F.floor(F.col("o_totalprice") * F.lit(100.0) + F.lit(0.5)).cast("long")
+    cents = order_cents()
     binned = (
         t.orders.select(F.col("o_orderpriority").alias("shard"), cents.alias("cents"))
         .where(F.col("cents") > 0)
@@ -357,300 +363,6 @@ def sketch_fixedbin_quantile_merge(spark: SparkSession, sf_dir: str) -> DataFram
             .cast("double")
             .alias("est_price"),
         )
-    )
-
-# ---------------------------------------------------------------------------
-# 6. Cohen's d effect size: urgent vs non-urgent order value
-# ---------------------------------------------------------------------------
-
-
-def _cohens_d_oracle() -> str:
-    from ..functions.exact import sql_round_big_int_ratio
-
-    m1 = "CAST(s1 AS DOUBLE) / n1"
-    m2 = "CAST(s2 AS DOUBLE) / n2"
-    v1 = f"CAST(ss1 AS DOUBLE) - n1 * ({m1}) * ({m1})"
-    v2 = f"CAST(ss2 AS DOUBLE) - n2 * ({m2}) * ({m2})"
-    sp2 = f"(({v1}) + ({v2})) / (n1 + n2 - 2)"
-    d = f"(({m1}) - ({m2})) / sqrt({sp2})"
-    return f"""
-    WITH c AS (
-      SELECT CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT) AS cents,
-             CASE WHEN o_orderpriority = '1-URGENT' THEN 1 ELSE 0 END AS g
-      FROM orders
-      WHERE o_totalprice IS NOT NULL
-    ), a AS (
-      SELECT CAST(sum(g) AS BIGINT) AS n1,
-             CAST(count(*) - sum(g) AS BIGINT) AS n2,
-             sum(CASE WHEN g = 1 THEN cents::HUGEINT ELSE 0 END) AS s1,
-             sum(CASE WHEN g = 0 THEN cents::HUGEINT ELSE 0 END) AS s2,
-             sum(CASE WHEN g = 1 THEN cents::HUGEINT * cents ELSE 0 END) AS ss1,
-             sum(CASE WHEN g = 0 THEN cents::HUGEINT * cents ELSE 0 END) AS ss2
-      FROM c)
-    SELECT n1 AS n_urgent, n2 AS n_other,
-           {sql_round_big_int_ratio('s1', '100 * n1', 4)} AS mean_urgent,
-           {sql_round_big_int_ratio('s2', '100 * n2', 4)} AS mean_other,
-           CASE WHEN n1 >= 2 AND n2 >= 2 AND ({sp2}) > 0
-                THEN CAST(floor(({d}) * 1000000.0 + 0.5) AS BIGINT) / 1000000.0
-           END AS cohens_d
-    FROM a
-    """
-
-
-@register("stats_cohens_d_priority", oracle=_cohens_d_oracle())
-def stats_cohens_d_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cohen's d standardized effect size of urgent-vs-other order
-    value — the "is the difference MEANINGFUL, not just significant"
-    companion to the t/z tests in the stats family.
-
-    Sufficient statistics only: conditional exact cents sums and
-    decimal(38,0) sums of squares (cast BEFORE the square — int64
-    overflows at web-scale magnitudes) in ONE scan, then the pooled-SD
-    ratio as a single identical IEEE expression off identical integers
-    (same float discipline as ``graph_degree_assortativity``).
-    Degenerate groups (n < 2, zero pooled variance) yield NULL on both
-    engines rather than a division error — the fuzz profiles hit this.
-    """
-    from ..functions.exact import round_big_int_ratio
-
-    t = Tables(spark, sf_dir)
-    cents = F.floor(F.col("o_totalprice") * F.lit(100.0) + F.lit(0.5)).cast("long")
-    c = t.orders.where(F.col("o_totalprice").isNotNull()).select(
-        cents.alias("cents"),
-        F.when(F.col("o_orderpriority") == "1-URGENT", 1).otherwise(0).alias("g"),
-    )
-    zero = F.lit(0).cast("decimal(38,0)")
-    a = c.agg(
-        F.sum("g").cast("long").alias("n1"),
-        (F.count(F.lit(1)) - F.sum("g")).cast("long").alias("n2"),
-        F.sum(F.when(F.col("g") == 1, dec38(F.col("cents"))).otherwise(zero)).alias("s1"),
-        F.sum(F.when(F.col("g") == 0, dec38(F.col("cents"))).otherwise(zero)).alias("s2"),
-        F.sum(
-            F.when(F.col("g") == 1, dec38(F.col("cents")) * F.col("cents")).otherwise(zero)
-        ).alias("ss1"),
-        F.sum(
-            F.when(F.col("g") == 0, dec38(F.col("cents")) * F.col("cents")).otherwise(zero)
-        ).alias("ss2"),
-    )
-    n1d, n2d = F.col("n1").cast("double"), F.col("n2").cast("double")
-    m1 = F.col("s1").cast("double") / n1d
-    m2 = F.col("s2").cast("double") / n2d
-    v1 = F.col("ss1").cast("double") - n1d * m1 * m1
-    v2 = F.col("ss2").cast("double") - n2d * m2 * m2
-    sp2 = (v1 + v2) / (n1d + n2d - F.lit(2.0))
-    d = (m1 - m2) / F.sqrt(sp2)
-    return a.select(
-        F.col("n1").alias("n_urgent"),
-        F.col("n2").alias("n_other"),
-        round_big_int_ratio(F.col("s1"), F.lit(100) * F.col("n1"), 4).alias(
-            "mean_urgent"
-        ),
-        round_big_int_ratio(F.col("s2"), F.lit(100) * F.col("n2"), 4).alias(
-            "mean_other"
-        ),
-        F.when(
-            (F.col("n1") >= 2) & (F.col("n2") >= 2) & (sp2 > 0),
-            F.floor(d * F.lit(1e6) + F.lit(0.5)).cast("long") / F.lit(1e6),
-        ).alias("cohens_d"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# 7. Trimmed / winsorized means per nation (robust location)
-# ---------------------------------------------------------------------------
-
-
-def _trimmed_oracle() -> str:
-    from ..functions.exact import sql_round_big_int_ratio
-
-    return f"""
-    WITH c AS (
-      SELECT n.n_name, o.o_orderkey,
-             CAST(floor(o.o_totalprice * 100.0 + 0.5) AS BIGINT) AS cents
-      FROM orders o
-      JOIN customer cu ON cu.c_custkey = o.o_custkey
-      JOIN nation n ON n.n_nationkey = cu.c_nationkey
-      WHERE o.o_totalprice IS NOT NULL
-    ), r AS (
-      SELECT n_name, cents,
-             row_number() OVER (PARTITION BY n_name
-                                ORDER BY cents, o_orderkey) AS rn,
-             count(*) OVER (PARTITION BY n_name) AS cnt
-      FROM c
-    ), a AS (
-      SELECT n_name,
-             CAST(max(cnt) AS BIGINT) AS n,
-             CAST(max(cnt) // 10 AS BIGINT) AS k_trim,
-             sum(cents::HUGEINT) AS sum_all,
-             sum(CASE WHEN rn > cnt // 10 AND rn <= cnt - cnt // 10
-                      THEN cents::HUGEINT ELSE 0 END) AS sum_trim,
-             max(CASE WHEN rn = cnt // 10 + 1 THEN cents END) AS lo,
-             max(CASE WHEN rn = cnt - cnt // 10 THEN cents END) AS hi
-      FROM r GROUP BY n_name)
-    SELECT n_name, n, k_trim,
-           {sql_round_big_int_ratio('sum_all', '100 * n', 4)} AS mean_price,
-           {sql_round_big_int_ratio('sum_trim', '100 * (n - 2 * k_trim)', 4)}
-             AS trimmed_mean,
-           {sql_round_big_int_ratio(
-               'sum_trim + k_trim::HUGEINT * lo + k_trim::HUGEINT * hi',
-               '100 * n', 4)} AS winsorized_mean
-    FROM a
-    """
-
-
-@register("stats_trimmed_winsorized_price", oracle=_trimmed_oracle())
-def stats_trimmed_winsorized_price(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """10% trimmed and winsorized mean order value per nation — the
-    robust-location estimators an outlier-ridden revenue series needs
-    (trimming drops each tail's floor(n/10) rows; winsorizing clamps
-    them to the surviving extremes).
-
-    One partitioned rank window (cents, orderkey — a total order, so
-    the trim cut is deterministic), then a per-nation aggregate whose
-    winsorized sum needs NO second pass: clamped tails contribute
-    k * boundary-value, and the boundary values are single-row
-    conditional aggregates off the same ranked rows. Exact cents in
-    decimal(38,0) end-to-end; means leave as exact half-up ratios.
-    Scale: windows partition by nation (never global), and the two
-    dimension joins broadcast.
-    """
-    from ..functions.exact import round_big_int_ratio
-
-    t = Tables(spark, sf_dir)
-    cents = F.floor(F.col("o_totalprice") * F.lit(100.0) + F.lit(0.5)).cast("long")
-    c = (
-        t.orders.where(F.col("o_totalprice").isNotNull())
-        .join(
-            F.broadcast(t.customer.select("c_custkey", "c_nationkey")),
-            F.col("o_custkey") == F.col("c_custkey"),
-        )
-        .join(
-            F.broadcast(t.nation.select("n_nationkey", "n_name")),
-            F.col("c_nationkey") == F.col("n_nationkey"),
-        )
-        .select("n_name", "o_orderkey", cents.alias("cents"))
-    )
-    wp = Window.partitionBy("n_name")
-    wo = wp.orderBy("cents", "o_orderkey")
-    r = c.select(
-        "n_name",
-        "cents",
-        F.row_number().over(wo).alias("rn"),
-        F.count(F.lit(1)).over(wp).alias("cnt"),
-    )
-    k = ((F.col("cnt") - F.col("cnt") % 10) / 10).cast("long")
-    zero = F.lit(0).cast("decimal(38,0)")
-    a = r.withColumn("k", k).groupBy("n_name").agg(
-        F.max("cnt").cast("long").alias("n"),
-        F.max("k").cast("long").alias("k_trim"),
-        F.sum(dec38(F.col("cents"))).alias("sum_all"),
-        F.sum(
-            F.when(
-                (F.col("rn") > F.col("k")) & (F.col("rn") <= F.col("cnt") - F.col("k")),
-                dec38(F.col("cents")),
-            ).otherwise(zero)
-        ).alias("sum_trim"),
-        F.max(F.when(F.col("rn") == F.col("k") + 1, F.col("cents"))).alias("lo"),
-        F.max(F.when(F.col("rn") == F.col("cnt") - F.col("k"), F.col("cents"))).alias(
-            "hi"
-        ),
-    )
-    return a.select(
-        "n_name",
-        "n",
-        "k_trim",
-        round_big_int_ratio(F.col("sum_all"), F.lit(100) * F.col("n"), 4).alias(
-            "mean_price"
-        ),
-        round_big_int_ratio(
-            F.col("sum_trim"), F.lit(100) * (F.col("n") - F.lit(2) * F.col("k_trim")), 4
-        ).alias("trimmed_mean"),
-        round_big_int_ratio(
-            F.col("sum_trim")
-            + dec38(F.col("k_trim")) * F.col("lo")
-            + dec38(F.col("k_trim")) * F.col("hi"),
-            F.lit(100) * F.col("n"),
-            4,
-        ).alias("winsorized_mean"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# 8. McNemar's test on paired document-quality rules
-# ---------------------------------------------------------------------------
-
-MCNEMAR_MIN_CHARS = 300
-MCNEMAR_MIN_TOKENS = 60
-
-
-def _mcnemar_oracle() -> str:
-    from ..functions.exact import sql_round_int_ratio
-    from .corpus import _SQL_TOKENS
-
-    return f"""
-    WITH flags AS (
-      SELECT CASE WHEN n_chars >= {MCNEMAR_MIN_CHARS} THEN 1 ELSE 0 END AS a,
-             CASE WHEN len({_SQL_TOKENS}) >= {MCNEMAR_MIN_TOKENS} THEN 1 ELSE 0 END AS b
-      FROM documents
-    ), agg AS (
-      SELECT CAST(count(*) AS BIGINT) AS n_docs,
-             CAST(sum(a * b) AS BIGINT) AS n_both,
-             CAST(sum(a * (1 - b)) AS BIGINT) AS n_a_only,
-             CAST(sum((1 - a) * b) AS BIGINT) AS n_b_only,
-             CAST(sum((1 - a) * (1 - b)) AS BIGINT) AS n_neither
-      FROM flags)
-    SELECT n_docs, n_both, n_a_only, n_b_only, n_neither,
-           CASE WHEN n_a_only + n_b_only > 0 THEN
-             {sql_round_int_ratio(
-                 '(n_a_only - n_b_only) * (n_a_only - n_b_only)',
-                 'n_a_only + n_b_only')}
-           END AS mcnemar_chi2
-    FROM agg
-    """
-
-
-@register("stats_mcnemar_quality_rules", oracle=_mcnemar_oracle())
-def stats_mcnemar_quality_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """McNemar's test for PAIRED binary classifiers: do the char-length
-    gate (n_chars >= {MCNEMAR_MIN_CHARS}) and the token-count gate
-    (tokens >= {MCNEMAR_MIN_TOKENS}) disagree symmetrically on the same
-    documents? The discordant-pair statistic (b - c)^2 / (b + c) is the
-    right comparison for two quality filters evaluated on one corpus —
-    marginal accuracy comparisons double-count the concordant mass.
-
-    One scan, one 5-value aggregate; the statistic is an exact integer
-    half-up ratio, NULL when there are no discordant pairs (fuzz
-    profiles produce degenerate corpora where both gates agree
-    everywhere).
-    """
-    from ..functions.exact import round_int_ratio
-    from ..functions.textnorm import whitespace_tokens
-
-    t = Tables(spark, sf_dir)
-    flags = t.documents.select(
-        F.when(F.col("n_chars") >= MCNEMAR_MIN_CHARS, 1).otherwise(0).alias("a"),
-        F.when(
-            F.size(whitespace_tokens(F.col("text"))) >= MCNEMAR_MIN_TOKENS, 1
-        ).otherwise(0).alias("b"),
-    )
-    agg = flags.agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum(F.col("a") * F.col("b")).cast("long").alias("n_both"),
-        F.sum(F.col("a") * (F.lit(1) - F.col("b"))).cast("long").alias("n_a_only"),
-        F.sum((F.lit(1) - F.col("a")) * F.col("b")).cast("long").alias("n_b_only"),
-        F.sum((F.lit(1) - F.col("a")) * (F.lit(1) - F.col("b")))
-        .cast("long")
-        .alias("n_neither"),
-    )
-    diff = F.col("n_a_only") - F.col("n_b_only")
-    disc = F.col("n_a_only") + F.col("n_b_only")
-    return agg.select(
-        "n_docs",
-        "n_both",
-        "n_a_only",
-        "n_b_only",
-        "n_neither",
-        F.when(disc > 0, round_int_ratio(diff * diff, disc)).alias("mcnemar_chi2"),
     )
 
 # ---------------------------------------------------------------------------
@@ -985,224 +697,12 @@ def events_hourly_entropy_profile(spark: SparkSession, sf_dir: str) -> DataFrame
 
 
 # ---------------------------------------------------------------------------
-# 12. Levene's test (variance homogeneity across order priorities)
-# ---------------------------------------------------------------------------
-
-
-def _levene_oracle() -> str:
-    return f"""
-    WITH c AS (
-      SELECT o_orderpriority AS g,
-             CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT) AS cents
-      FROM orders WHERE o_totalprice IS NOT NULL
-    ), gs AS (
-      SELECT g, CAST(count(*) AS BIGINT) AS n_g,
-             CAST(sum(cents::HUGEINT) AS HUGEINT) AS s_g
-      FROM c GROUP BY g
-    ), z AS (
-      SELECT c.g,
-             CAST(floor(abs(CAST(c.cents AS DOUBLE)
-                            - CAST(gs.s_g AS DOUBLE) / gs.n_g)
-                        * 100.0 + 0.5) AS BIGINT) AS z_q
-      FROM c JOIN gs USING (g)
-    ), zg AS (
-      SELECT g, CAST(count(*) AS BIGINT) AS n_g,
-             CAST(sum(z_q::HUGEINT) AS HUGEINT) AS sz_g,
-             CAST(sum(z_q::HUGEINT * z_q) AS HUGEINT) AS szz_g
-      FROM z GROUP BY g
-    ), a AS (
-      SELECT CAST(count(*) AS BIGINT) AS k,
-             CAST(sum(n_g) AS BIGINT) AS n_total,
-             CAST(sum(sz_g) AS HUGEINT) AS sz,
-             CAST(sum((sz_g * sz_g) // n_g) AS HUGEINT) AS bet_sum,
-             CAST(sum(szz_g) AS HUGEINT) AS szz
-      FROM zg)
-    SELECT k, n_total,
-           CASE WHEN k >= 2 AND n_total > k
-                     AND CAST(szz - bet_sum AS DOUBLE) > 0 THEN
-             CAST(floor(((CAST(n_total - k AS DOUBLE) / (k - 1))
-                         * (CAST(bet_sum - (sz * sz) // n_total AS DOUBLE)
-                            / CAST(szz - bet_sum AS DOUBLE)))
-                        * 1000000.0 + 0.5) AS BIGINT) / 1000000.0
-           END AS levene_w
-    FROM a
-    """
-
-
-@register("stats_levene_priority", oracle=_levene_oracle())
-def stats_levene_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Levene\'s test statistic W for homogeneity of order-value
-    variance across the five order priorities — the assumption check
-    gating every pooled-variance test in the family (Welch ANOVA
-    exists for unequal variances; Levene tells you when you need it).
-
-    Exactness: mean-centered absolute deviations z_ij = |x - mean_g|
-    quantize per row at 1e-2 cents BEFORE any sum (the mean is the
-    identical s_g/n_g double on both engines), so every sum is an
-    exact integer; the two quadratic forms then stay EXACT via
-    truncated integer division (sz_g^2 // n_g in decimal/HUGEINT —
-    never a cross-group float sum, whose partial-aggregation order
-    would differ between engines), and W assembles as one identical
-    IEEE expression off those integers. Headroom: sz_g^2 fits
-    decimal(38,0) up to ~1e7 rows/group at this quantization; larger
-    corpora drop the z scale (documented trade, same class as the
-    Cram\xe9r\'s V overflow rework).
-
-    Scale: two scans (group moments, then deviations), a broadcast
-    |groups|-row join, 5-row final domain. Degenerate inputs (k < 2,
-    zero within-group variance) yield NULL on both engines.
-    """
-    t = Tables(spark, sf_dir)
-    cents = F.floor(F.col("o_totalprice") * F.lit(100.0) + F.lit(0.5)).cast("long")
-    c = t.orders.where(F.col("o_totalprice").isNotNull()).select(
-        F.col("o_orderpriority").alias("g"), cents.alias("cents")
-    )
-    gs = c.groupBy("g").agg(
-        F.count(F.lit(1)).alias("n_g"), F.sum(dec38(F.col("cents"))).alias("s_g")
-    )
-    z_q = F.floor(
-        F.abs(
-            F.col("cents").cast("double")
-            - F.col("s_g").cast("double") / F.col("n_g")
-        )
-        * F.lit(100.0)
-        + F.lit(0.5)
-    ).cast("long")
-    z = c.join(F.broadcast(gs), "g").select("g", z_q.alias("z_q"))
-    zg = z.groupBy("g").agg(
-        F.count(F.lit(1)).alias("n_g"),
-        F.sum(dec38(F.col("z_q"))).alias("sz_g"),
-        F.sum(dec38(F.col("z_q")) * F.col("z_q")).alias("szz_g"),
-    )
-
-    def _tdiv(num, den):
-        # exact truncated integer division in decimal: (a - a % b) / b
-        return (num - num % den) / den
-
-    a = zg.agg(
-        F.count(F.lit(1)).alias("k"),
-        F.sum("n_g").cast("long").alias("n_total"),
-        F.sum(F.col("sz_g")).alias("sz"),
-        F.sum(_tdiv(F.col("sz_g") * F.col("sz_g"), dec38(F.col("n_g")))).alias(
-            "bet_sum"
-        ),
-        F.sum(F.col("szz_g")).alias("szz"),
-    )
-    kd = F.col("k").cast("double")
-    within = (F.col("szz") - F.col("bet_sum")).cast("double")
-    between = (
-        F.col("bet_sum") - _tdiv(F.col("sz") * F.col("sz"), dec38(F.col("n_total")))
-    ).cast("double")
-    w_stat = ((F.col("n_total").cast("double") - kd) / (kd - F.lit(1.0))) * (
-        between / within
-    )
-    return a.select(
-        "k",
-        "n_total",
-        F.when(
-            (F.col("k") >= 2) & (F.col("n_total") > F.col("k")) & (within > 0),
-            F.floor(w_stat * F.lit(1e6) + F.lit(0.5)).cast("long") / F.lit(1e6),
-        ).alias("levene_w"),
-    )
-
-# ---------------------------------------------------------------------------
-# 13. Cochran's Q across three document-quality gates
-# ---------------------------------------------------------------------------
-
-COCHRAN_MIN_SENTENCES = 2
-
-
-def _cochran_oracle() -> str:
-    from ..functions.exact import sql_round_big_int_ratio
-    from .corpus import _SQL_TOKENS
-
-    return f"""
-    WITH flags AS (
-      SELECT CASE WHEN n_chars >= {MCNEMAR_MIN_CHARS} THEN 1 ELSE 0 END AS a,
-             CASE WHEN len({_SQL_TOKENS}) >= {MCNEMAR_MIN_TOKENS} THEN 1 ELSE 0 END AS b,
-             CASE WHEN len(string_split(text, '.')) - 1 >= {COCHRAN_MIN_SENTENCES}
-                  THEN 1 ELSE 0 END AS c
-      FROM documents
-    ), agg AS (
-      SELECT CAST(count(*) AS BIGINT) AS n_docs,
-             CAST(sum(a) AS BIGINT) AS g_a,
-             CAST(sum(b) AS BIGINT) AS g_b,
-             CAST(sum(c) AS BIGINT) AS g_c,
-             CAST(sum(a + b + c) AS BIGINT) AS sl,
-             CAST(sum((a + b + c) * (a + b + c)) AS BIGINT) AS sll
-      FROM flags)
-    SELECT n_docs, g_a, g_b, g_c,
-           CASE WHEN 3 * sl - sll > 0 THEN
-             {sql_round_big_int_ratio(
-                 '2 * (3 * (g_a::HUGEINT * g_a + g_b::HUGEINT * g_b '
-                 '+ g_c::HUGEINT * g_c) - sl::HUGEINT * sl)',
-                 '3 * sl - sll')}
-           END AS cochran_q
-    FROM agg
-    """
-
-
-@register("stats_cochran_q_gates", oracle=_cochran_oracle())
-def stats_cochran_q_gates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cochran's Q for THREE paired binary quality gates (char-length,
-    token-count, sentence-count) on the same documents — the k-gate
-    generalization of the McNemar pair: do the gates admit
-    significantly different fractions of the corpus?
-
-    Q = (k-1) (k Sum G_j^2 - (Sum G_j)^2) / (k Sum L_i - Sum L_i^2)
-    with G the per-gate totals and L the per-document pass counts —
-    every term an exact integer off ONE scan (L in {{0..3}}, so the
-    row-level squares are trivial), the statistic one exact half-up
-    decimal ratio, NULL when every document passes all or no gates.
-    """
-    from ..functions.exact import round_big_int_ratio
-    from ..functions.textnorm import whitespace_tokens
-
-    t = Tables(spark, sf_dir)
-    a = F.when(F.col("n_chars") >= MCNEMAR_MIN_CHARS, 1).otherwise(0)
-    b = F.when(
-        F.size(whitespace_tokens(F.col("text"))) >= MCNEMAR_MIN_TOKENS, 1
-    ).otherwise(0)
-    cgate = F.when(
-        F.size(F.split(F.col("text"), "\\.", -1)) - 1 >= COCHRAN_MIN_SENTENCES, 1
-    ).otherwise(0)
-    li = a + b + cgate
-    agg = t.documents.select(
-        a.alias("a"), b.alias("b"), cgate.alias("c"), li.alias("l")
-    ).agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("a").cast("long").alias("g_a"),
-        F.sum("b").cast("long").alias("g_b"),
-        F.sum("c").cast("long").alias("g_c"),
-        F.sum("l").cast("long").alias("sl"),
-        F.sum(F.col("l") * F.col("l")).cast("long").alias("sll"),
-    )
-    num = F.lit(2).cast("decimal(38,0)") * (
-        F.lit(3).cast("decimal(38,0)")
-        * (
-            dec38(F.col("g_a")) * F.col("g_a")
-            + dec38(F.col("g_b")) * F.col("g_b")
-            + dec38(F.col("g_c")) * F.col("g_c")
-        )
-        - dec38(F.col("sl")) * F.col("sl")
-    )
-    den = F.lit(3) * F.col("sl") - F.col("sll")
-    return agg.select(
-        "n_docs",
-        "g_a",
-        "g_b",
-        "g_c",
-        F.when(den > 0, round_big_int_ratio(num, dec38(den))).alias("cochran_q"),
-    )
-
-
-# ---------------------------------------------------------------------------
 # 14. Logistic calibration slope / intercept (linear recalibration)
 # ---------------------------------------------------------------------------
 
 
 def _calibration_oracle() -> str:
-    from .roundfive import logit_cte_chain
+    from .stats_models import logit_cte_chain
 
     ctes, w0, w1 = logit_cte_chain()
     p = f"1.0 / (1.0 + exp(-(({w0}) / 1000000.0 + ({w1}) / 1000000.0 * x)))"
@@ -1252,7 +752,7 @@ def ml_calibration_slope_intercept(spark: SparkSession, sf_dir: str) -> DataFram
     micro-probability units to keep the quantized-domain arithmetic
     transparent). Degenerate zero-variance predictions yield NULL.
     """
-    from .roundfive import logit_base, logit_sigmoid, logit_weight_steps
+    from .stats_models import logit_base, logit_sigmoid, logit_weight_steps
 
     t = Tables(spark, sf_dir)
     w = logit_weight_steps(t)[-1]
@@ -1341,7 +841,7 @@ def dq_iqr_outlier_fences(spark: SparkSession, sf_dir: str) -> DataFrame:
     output.
     """
     t = Tables(spark, sf_dir)
-    cents = F.floor(F.col("o_totalprice") * F.lit(100.0) + F.lit(0.5)).cast("long")
+    cents = order_cents()
     c = (
         t.orders.where(F.col("o_totalprice").isNotNull())
         .join(

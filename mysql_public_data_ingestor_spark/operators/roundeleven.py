@@ -13,6 +13,11 @@ release, and a last-digit preference audit.
 
 ``events_periodogram_fixed_periods`` lives in
 ``operators/daily_spectral.py`` with the other daily-series queries.
+
+``stats_brown_forsythe_quantity`` and ``stats_tukey_hsd_priority`` live
+in ``operators/stats_models.py``; ``stats_fligner_policello_status``,
+``stats_k_sample_median_test`` and ``stats_sign_test_daily_pair`` live
+in ``operators/stats_rank.py`` with the other stats queries.
 """
 
 from __future__ import annotations
@@ -21,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions.exact import dec38, halfup_div, sql_halfup_div
+from ..functions.exact import dec38, halfup_div, order_cents, sql_halfup_div
 from ..registry import register
 from ..tables import Tables
 
@@ -381,138 +386,6 @@ def events_granger_lag1_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         round_big_int_ratio(
             F.col("expl_u_scaled"), F.col("tss_n") * F.col("dd")
         ).alias("r2_unrestricted"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# 3. Tukey HSD post-hoc pairs (l_quantity by order priority)
-# ---------------------------------------------------------------------------
-
-
-def _tukey_oracle() -> str:
-    from ..functions.exact import sql_round_big_int_ratio
-
-    return f"""
-    WITH jn AS (
-      SELECT o.o_orderpriority AS g, CAST(l.l_quantity AS BIGINT) AS q
-      FROM lineitem l JOIN orders o ON o.o_orderkey = l.l_orderkey
-    ), grp AS (
-      SELECT g, CAST(count(*) AS HUGEINT) AS n,
-             CAST(sum(q) AS HUGEINT) AS s,
-             CAST(sum(q * q) AS HUGEINT) AS qq
-      FROM jn GROUP BY g
-    ), gq AS (
-      SELECT g, n, s,
-             {sql_halfup_div('10000::HUGEINT * s', 'n')} AS mq,
-             {sql_halfup_div('10000::HUGEINT * (n * qq - s * s)', 'n')} AS sswq
-      FROM grp
-    ), tot AS (
-      SELECT CAST(sum(n) AS HUGEINT) AS nn,
-             CAST(count(*) AS HUGEINT) AS kk,
-             CAST(sum(sswq) AS HUGEINT) AS ssw
-      FROM gq
-    ), pairs AS (
-      SELECT a.g AS prio_a, b.g AS prio_b,
-             a.n AS na, b.n AS nb, a.mq - b.mq AS dm,
-             t.nn, t.kk, t.ssw
-      FROM gq a JOIN gq b ON a.g < b.g, tot t
-    )
-    SELECT prio_a, prio_b,
-           CAST(na AS BIGINT) AS n_a, CAST(nb AS BIGINT) AS n_b,
-           CAST(dm AS BIGINT) / 10000.0 AS mean_diff,
-           CASE WHEN ssw > 0 AND nn > kk THEN
-             {sql_round_big_int_ratio(
-                 '(CASE WHEN dm < 0 THEN -1 ELSE 1 END) * dm * dm'
-                 ' * 2 * na * nb * (nn - kk)',
-                 '10000::HUGEINT * ssw * (na + nb)')}
-           END AS q_signed_sq
-    FROM pairs
-    """
-
-
-@register("stats_tukey_hsd_priority", _tukey_oracle())
-def stats_tukey_hsd_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tukey HSD post-hoc pairwise comparisons of mean l_quantity
-    across the five order priorities: the studentized-range statistic
-    q_ij = (m_i - m_j)/sqrt(MSW/2 * (1/n_i + 1/n_j)) for every
-    priority pair — the missing POST-HOC member after the omnibus
-    family (one/two-way ANOVA, Welch, Kruskal-Wallis all say "some
-    group differs"; Tukey says WHICH pairs, with family-wise control).
-
-    House exact form sign(q)*q^2 (the sqrt-avoidance convention):
-    group means and the within-group sum of squares quantize ONCE at
-    1e-4 via the shared half-up idiom (mq = [1e4*S/n], sswq =
-    [1e4*(n*Sum(q^2) - S^2)/n] per group — exact integers on both
-    engines), then sign*dm^2*2*n_i*n_j*(N-k) /
-    (1e4*SSW_q*(n_i+n_j)) is one round_big_int_ratio per pair
-    (numerator <= ~1e34 at sf1x10, inside decimal(38)/HUGEINT). One
-    fact-scan aggregate to 5 group rows; the pair grid is 10 rows by
-    mechanism.
-    """
-    from ..functions.exact import round_big_int_ratio
-
-    t = Tables(spark, sf_dir)
-    jn = t.lineitem.join(
-        t.orders.select("o_orderkey", "o_orderpriority"),
-        t.lineitem.l_orderkey == F.col("o_orderkey"),
-    ).select(
-        F.col("o_orderpriority").alias("g"),
-        F.col("l_quantity").cast("long").alias("q"),
-    )
-    grp = jn.groupBy("g").agg(
-        dec38(F.count(F.lit(1))).alias("n"),
-        dec38(F.sum("q")).alias("s"),
-        dec38(F.sum(F.col("q") * F.col("q"))).alias("qq"),
-    )
-    ten4 = F.lit(10000).cast("decimal(38,0)")
-    gq = grp.select(
-        "g",
-        "n",
-        halfup_div(ten4 * F.col("s"), F.col("n")).alias("mq"),
-        halfup_div(
-            ten4 * (F.col("n") * F.col("qq") - F.col("s") * F.col("s")),
-            F.col("n"),
-        ).alias("sswq"),
-    )
-    tot = gq.agg(
-        F.sum("n").alias("nn"),
-        dec38(F.count(F.lit(1))).alias("kk"),
-        F.sum("sswq").alias("ssw"),
-    )
-    a = gq.select(
-        F.col("g").alias("prio_a"),
-        F.col("n").alias("na"),
-        F.col("mq").alias("mqa"),
-    )
-    b = gq.select(
-        F.col("g").alias("prio_b"),
-        F.col("n").alias("nb"),
-        F.col("mq").alias("mqb"),
-    )
-    pairs = a.join(F.broadcast(b), F.col("prio_a") < F.col("prio_b")).crossJoin(
-        F.broadcast(tot)
-    )
-    dm = F.col("mqa") - F.col("mqb")
-    sign = F.when(dm < 0, F.lit(-1)).otherwise(F.lit(1)).cast("decimal(38,0)")
-    return pairs.select(
-        "prio_a",
-        "prio_b",
-        F.col("na").cast("long").alias("n_a"),
-        F.col("nb").cast("long").alias("n_b"),
-        (dm.cast("long") / F.lit(1e4)).alias("mean_diff"),
-        F.when(
-            (F.col("ssw") > 0) & (F.col("nn") > F.col("kk")),
-            round_big_int_ratio(
-                sign
-                * dm
-                * dm
-                * F.lit(2).cast("decimal(38,0)")
-                * F.col("na")
-                * F.col("nb")
-                * (F.col("nn") - F.col("kk")),
-                ten4 * F.col("ssw") * (F.col("na") + F.col("nb")),
-            ),
-        ).alias("q_signed_sq"),
     )
 
 
@@ -944,7 +817,7 @@ def dq_digit_preference_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     t = Tables(spark, sf_dir)
     cents = t.orders.filter(F.col("o_totalprice").isNotNull()).select(
-        (F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long") % 10).alias(
+        (order_cents() % 10).alias(
             "digit"
         )
     )
@@ -965,103 +838,6 @@ def dq_digit_preference_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("num"),
             F.lit(10).cast("decimal(38,0)") * dec38(F.col("n")) * dec38(F.col("n")),
         ).alias("chi2_over_n"),
-    )
-
-
-# ===========================================================================
-# Queue batch B (round-10 second bank — same-commit gates)
-# ===========================================================================
-
-
-# ---------------------------------------------------------------------------
-# 10. Paired sign test on the daily view/purchase series
-# ---------------------------------------------------------------------------
-
-
-def _sign_test_oracle() -> str:
-    from ..functions.exact import sql_round_big_int_ratio
-
-    return f"""
-    WITH days AS (
-      SELECT DISTINCT CAST(ts AS DATE) AS d FROM events
-    ), cx AS (
-      SELECT CAST(ts AS DATE) AS d, CAST(count(*) AS BIGINT) AS c
-      FROM events WHERE event_type = 'view' GROUP BY 1
-    ), cy AS (
-      SELECT CAST(ts AS DATE) AS d, CAST(count(*) AS BIGINT) AS c
-      FROM events WHERE event_type = 'purchase' GROUP BY 1
-    ), paired AS (
-      SELECT coalesce(cx.c, 0) AS x, coalesce(cy.c, 0) AS y
-      FROM days LEFT JOIN cx ON cx.d = days.d LEFT JOIN cy ON cy.d = days.d
-    ), agg AS (
-      SELECT CAST(sum(CASE WHEN x <> y THEN 1 ELSE 0 END) AS BIGINT) AS m,
-             CAST(sum(CASE WHEN x > y THEN 1 ELSE 0 END) AS BIGINT) AS b_plus,
-             CAST(count(*) AS BIGINT) AS n_days
-      FROM paired
-    )
-    SELECT n_days, m AS n_informative, b_plus,
-           CASE WHEN m > 0 THEN
-             {sql_round_big_int_ratio(
-                 '(CASE WHEN 2 * b_plus < m THEN -1 ELSE 1 END)'
-                 ' * (2 * b_plus - m) * (2 * b_plus - m)',
-                 'm')}
-           END AS z_signed_sq
-    FROM agg
-    """
-
-
-@register("stats_sign_test_daily_pair", _sign_test_oracle())
-def stats_sign_test_daily_pair(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Paired sign test of the daily view vs purchase counts: on each
-    calendar day the pair (views, purchases) gives one sign; under
-    exchangeability B+ ~ Binomial(m, 1/2) over the m informative
-    (non-tied) days, and sign(Z)*Z^2 = sign * (2B - m)^2 / m is the
-    house exact form of the normal approximation. The DISTRIBUTION-
-    FREE paired-location member beside the Wilcoxon signed-rank
-    (which already covers magnitudes): the sign test is the one that
-    survives arbitrary per-day scale differences.
-
-    Calendar-bounded throughout: per-(type, day) partial aggregation,
-    zero-filled spine, one scalar aggregate, one exact ratio.
-    """
-    from ..functions.exact import round_big_int_ratio
-
-    t = Tables(spark, sf_dir)
-    ev = t.events.select(F.to_date("ts").alias("d"), "event_type")
-    days = ev.select("d").distinct()
-    cx = (
-        ev.filter(F.col("event_type") == "view")
-        .groupBy("d")
-        .agg(F.count(F.lit(1)).alias("cx"))
-    )
-    cy = (
-        ev.filter(F.col("event_type") == "purchase")
-        .groupBy("d")
-        .agg(F.count(F.lit(1)).alias("cy"))
-    )
-    paired = (
-        days.join(cx, "d", "left")
-        .join(cy, "d", "left")
-        .select(
-            F.coalesce(F.col("cx"), F.lit(0)).alias("x"),
-            F.coalesce(F.col("cy"), F.lit(0)).alias("y"),
-        )
-    )
-    agg = paired.agg(
-        F.sum(F.when(F.col("x") != F.col("y"), 1).otherwise(0)).alias("m"),
-        F.sum(F.when(F.col("x") > F.col("y"), 1).otherwise(0)).alias("b_plus"),
-        F.count(F.lit(1)).alias("n_days"),
-    )
-    dev = F.lit(2) * F.col("b_plus") - F.col("m")
-    sign = F.when(dev < 0, F.lit(-1)).otherwise(F.lit(1)).cast("decimal(38,0)")
-    return agg.select(
-        "n_days",
-        F.col("m").alias("n_informative"),
-        "b_plus",
-        F.when(
-            F.col("m") > 0,
-            round_big_int_ratio(sign * dec38(dev) * dec38(dev), dec38(F.col("m"))),
-        ).alias("z_signed_sq"),
     )
 
 
@@ -1543,485 +1319,6 @@ def events_absorbing_markov_steps(spark: SparkSession, sf_dir: str) -> DataFrame
     for r in rows[1:]:
         out = out.unionByName(r)
     return out
-
-
-# ---------------------------------------------------------------------------
-# 16. Brown-Forsythe (median-centered Levene) on quantity by priority
-# ---------------------------------------------------------------------------
-
-
-def _brown_forsythe_oracle() -> str:
-    from ..functions.exact import sql_round_big_int_ratio, sql_round_int_ratio
-
-    return f"""
-    WITH jn AS (
-      SELECT o.o_orderpriority AS g, CAST(l.l_quantity AS BIGINT) AS q
-      FROM lineitem l JOIN orders o ON o.o_orderkey = l.l_orderkey
-    ), grid AS (
-      SELECT g, q, CAST(count(*) AS BIGINT) AS cnt FROM jn GROUP BY g, q
-    ), cum AS (
-      SELECT a.g, a.q, a.cnt,
-             CAST(sum(b.cnt) AS BIGINT) AS cle
-      FROM grid a JOIN grid b ON b.g = a.g AND b.q <= a.q
-      GROUP BY a.g, a.q, a.cnt
-    ), gn AS (
-      SELECT g, CAST(sum(cnt) AS BIGINT) AS n FROM grid GROUP BY g
-    ), med AS (
-      SELECT c.g, CAST(min(c.q) AS BIGINT) AS med
-      FROM cum c JOIN gn ON gn.g = c.g
-      WHERE c.cle >= (gn.n + 1) // 2
-      GROUP BY c.g
-    ), zrows AS (
-      SELECT gr.g, gr.cnt, abs(gr.q - med.med) AS z
-      FROM grid gr JOIN med ON med.g = gr.g
-    ), per_g AS (
-      SELECT g, CAST(sum(cnt) AS HUGEINT) AS n,
-             CAST(sum(cnt * z) AS HUGEINT) AS sz,
-             CAST(sum(cnt * z * z) AS HUGEINT) AS szz
-      FROM zrows GROUP BY g
-    ), tq AS (
-      SELECT g, n, sz, szz,
-             {sql_halfup_div('10000::HUGEINT * sz * sz', 'n')} AS t_g
-      FROM per_g
-    ), tot AS (
-      SELECT CAST(sum(n) AS HUGEINT) AS nn,
-             CAST(count(*) AS HUGEINT) AS kk,
-             CAST(sum(sz) AS HUGEINT) AS sz_all,
-             CAST(sum(szz) AS HUGEINT) AS szz_all,
-             CAST(sum(t_g) AS HUGEINT) AS t_sum
-      FROM tq
-    ), stat AS (
-      SELECT nn, kk,
-             t_sum - {sql_halfup_div('10000::HUGEINT * sz_all * sz_all',
-                                      'nn')} AS b_q,
-             10000::HUGEINT * szz_all - t_sum AS d_q
-      FROM tot
-    )
-    SELECT t.g AS priority, CAST(t.n AS BIGINT) AS n,
-           CAST(m.med AS BIGINT) AS group_median,
-           {sql_round_int_ratio('CAST(t.sz AS BIGINT)', 'CAST(t.n AS BIGINT)')}
-             AS mean_absdev,
-           CASE WHEN s.d_q > 0 AND s.kk > 1 AND s.nn > s.kk THEN
-             {sql_round_big_int_ratio('s.b_q * (s.nn - s.kk)',
-                                      's.d_q * (s.kk - 1)')}
-           END AS w_stat
-    FROM tq t JOIN med m ON m.g = t.g CROSS JOIN stat s
-    """
-
-
-@register("stats_brown_forsythe_quantity", _brown_forsythe_oracle())
-def stats_brown_forsythe_quantity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Brown-Forsythe test (median-centered Levene) for homogeneity of
-    l_quantity spread across order priorities — the ROBUST member of
-    the variance-test family: stats_levene_priority centers on the
-    MEAN (power against normal-ish alternatives, fragile under
-    skew/outliers), Bartlett assumes normality outright; BF's
-    median-centered deviations keep the test's size under heavy
-    tails, which is why it is the default in most stats packages.
-
-    Exactness beats the Levene op's: the group median over the
-    ≤50-value quantity domain is an exact integer (nearest-rank via
-    the bounded-grid cumulative), so z = |q − med| is an exact int
-    per grid cell and EVERY sum is integer-weighted by cell counts —
-    no per-row float deviation anywhere. The two quadratic forms
-    quantize once per group at 1e-4 by the shared half-up idiom and W
-    assembles as one round_big_int_ratio. All heavy work is the
-    lineitem⋈orders scan partial-aggregated to the (priority,
-    quantity) grid (≤ 250 cells); medians, sums and W live on that
-    grid.
-    """
-    from ..functions.exact import round_big_int_ratio, round_int_ratio
-
-    t = Tables(spark, sf_dir)
-    jn = t.lineitem.join(
-        t.orders.select("o_orderkey", "o_orderpriority"),
-        t.lineitem.l_orderkey == F.col("o_orderkey"),
-    ).select(
-        F.col("o_orderpriority").alias("g"),
-        F.col("l_quantity").cast("long").alias("q"),
-    )
-    grid = jn.groupBy("g", "q").agg(F.count(F.lit(1)).alias("cnt"))
-    gb = grid.select(
-        F.col("g").alias("g_b"), F.col("q").alias("q_b"), F.col("cnt").alias("cnt_b")
-    )
-    cum = (
-        grid.join(
-            F.broadcast(gb),
-            (F.col("g_b") == F.col("g")) & (F.col("q_b") <= F.col("q")),
-        )
-        .groupBy("g", "q", "cnt")
-        .agg(F.sum("cnt_b").alias("cle"))
-    )
-    gn = grid.groupBy("g").agg(F.sum("cnt").alias("n"))
-    med = (
-        cum.join(F.broadcast(gn), "g")
-        .filter(F.col("cle") >= ((F.col("n") + 1) - (F.col("n") + 1) % 2) / 2)
-        .groupBy("g")
-        .agg(F.min("q").alias("med"))
-    )
-    zrows = grid.join(F.broadcast(med), "g").select(
-        "g", "cnt", F.abs(F.col("q") - F.col("med")).alias("z")
-    )
-    per_g = zrows.groupBy("g").agg(
-        dec38(F.sum("cnt")).alias("n"),
-        dec38(F.sum(F.col("cnt") * F.col("z"))).alias("sz"),
-        dec38(F.sum(F.col("cnt") * F.col("z") * F.col("z"))).alias("szz"),
-    )
-    e4 = F.lit(10000).cast("decimal(38,0)")
-    tq = per_g.select(
-        "g",
-        "n",
-        "sz",
-        "szz",
-        halfup_div(e4 * F.col("sz") * F.col("sz"), F.col("n")).alias("t_g"),
-    )
-    tot = tq.agg(
-        F.sum("n").alias("nn"),
-        dec38(F.count(F.lit(1))).alias("kk"),
-        F.sum("sz").alias("sz_all"),
-        F.sum("szz").alias("szz_all"),
-        F.sum("t_g").alias("t_sum"),
-    )
-    stat = tot.select(
-        "nn",
-        "kk",
-        (
-            F.col("t_sum")
-            - halfup_div(e4 * F.col("sz_all") * F.col("sz_all"), F.col("nn"))
-        ).alias("b_q"),
-        (e4 * F.col("szz_all") - F.col("t_sum")).alias("d_q"),
-    )
-    one = F.lit(1).cast("decimal(38,0)")
-    return (
-        tq.join(F.broadcast(med.select(F.col("g"), F.col("med"))), "g")
-        .crossJoin(F.broadcast(stat))
-        .select(
-            F.col("g").alias("priority"),
-            F.col("n").cast("long").alias("n"),
-            F.col("med").cast("long").alias("group_median"),
-            round_int_ratio(
-                F.col("sz").cast("long"), F.col("n").cast("long")
-            ).alias("mean_absdev"),
-            F.when(
-                (F.col("d_q") > 0) & (F.col("kk") > 1) & (F.col("nn") > F.col("kk")),
-                round_big_int_ratio(
-                    F.col("b_q") * (F.col("nn") - F.col("kk")),
-                    F.col("d_q") * (F.col("kk") - one),
-                ),
-            ).alias("w_stat"),
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
-# 17. Fligner-Policello robust rank-order test (quantity by linestatus)
-# ---------------------------------------------------------------------------
-
-
-def _fp_oracle() -> str:
-    from ..functions.exact import sql_round_big_int_ratio
-
-    return f"""
-    WITH rows_ AS (
-      SELECT l_linestatus AS s, CAST(l_quantity AS BIGINT) AS q
-      FROM lineitem WHERE l_linestatus IN ('F', 'O')
-    ), grid AS (
-      SELECT s, q, CAST(count(*) AS BIGINT) AS cnt FROM rows_ GROUP BY s, q
-    ), a AS (SELECT q, cnt FROM grid WHERE s = 'F'),
-    b AS (SELECT q, cnt FROM grid WHERE s = 'O'),
-    pa AS (
-      SELECT a.q, a.cnt,
-             CAST(2 * coalesce(sum(CASE WHEN b.q < a.q THEN b.cnt END), 0)
-                  + coalesce(sum(CASE WHEN b.q = a.q THEN b.cnt END), 0)
-                  AS BIGINT) AS p2
-      FROM a LEFT JOIN b ON b.q <= a.q
-      GROUP BY a.q, a.cnt
-    ), pb AS (
-      SELECT b.q, b.cnt,
-             CAST(2 * coalesce(sum(CASE WHEN a.q < b.q THEN a.cnt END), 0)
-                  + coalesce(sum(CASE WHEN a.q = b.q THEN a.cnt END), 0)
-                  AS BIGINT) AS p2
-      FROM b LEFT JOIN a ON a.q <= b.q
-      GROUP BY b.q, b.cnt
-    ), sums AS (
-      SELECT (SELECT CAST(sum(cnt) AS HUGEINT) FROM pa) AS m,
-             (SELECT CAST(sum(cnt) AS HUGEINT) FROM pb) AS n,
-             (SELECT CAST(sum(cnt * p2) AS HUGEINT) FROM pa) AS sp2,
-             (SELECT CAST(sum(cnt * p2) AS HUGEINT) FROM pb) AS sq2,
-             (SELECT CAST(sum(cnt * p2 * p2) AS HUGEINT) FROM pa) AS s2p2,
-             (SELECT CAST(sum(cnt * p2 * p2) AS HUGEINT) FROM pb) AS s2q2
-    ), bq AS (
-      SELECT m, n, sp2, sq2,
-             {sql_halfup_div('100::HUGEINT * (m * s2p2 - sp2 * sp2)', 'm')}
-               AS b1,
-             {sql_halfup_div('100::HUGEINT * (n * s2q2 - sq2 * sq2)', 'n')}
-               AS b2,
-             {sql_halfup_div('100::HUGEINT * sp2 * sq2', 'm * n')} AS b3
-      FROM sums
-    )
-    SELECT CAST(m AS BIGINT) AS n_f, CAST(n AS BIGINT) AS n_o,
-           CASE WHEN b1 + b2 + b3 > 0 THEN
-             {sql_round_big_int_ratio(
-                 '(CASE WHEN sp2 < sq2 THEN -1 ELSE 1 END)'
-                 ' * 25 * (sp2 - sq2) * (sp2 - sq2)',
-                 'b1 + b2 + b3')}
-           END AS u_signed_sq
-    FROM bq
-    """
-
-
-@register("stats_fligner_policello_status", _fp_oracle())
-def stats_fligner_policello_status(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fligner-Policello robust rank-order test of l_quantity between
-    the two line statuses: U = (ΣP − ΣQ)/(2√(V₁+V₂+P̄Q̄)) built from
-    PLACEMENTS (P_i = #{y < x_i} + ½#{y = x_i}) — the
-    Behrens-Fisher-robust two-sample location test: Mann-Whitney
-    assumes equal shapes, the t-test equal-ish variances; FP stays
-    valid when the groups differ in BOTH spread and shape, which is
-    the actual situation after any non-random split.
-
-    House exact form sign(U)·U²: doubled placements 2P are exact
-    integers computed on the ≤50-value quantity grid (count-weighted
-    — never per-row ranks), the three variance addends quantize once
-    at 1e-2 via the shared half-up idiom (4·[V₁+V₂+P̄Q̄] =
-    (b₁+b₂+b₃)/100), and sign·25·(ΣP₂−ΣQ₂)²/(b₁+b₂+b₃) is one
-    round_big_int_ratio — numerator ≲ 10³⁴ at sf1×10, inside
-    decimal(38)/HUGEINT. One fact scan to the bounded grid;
-    placements are grid×grid non-equi joins over ≤50 distinct values.
-    """
-    from ..functions.exact import round_big_int_ratio
-
-    t = Tables(spark, sf_dir)
-    rows = t.lineitem.filter(F.col("l_linestatus").isin("F", "O")).select(
-        F.col("l_linestatus").alias("s"),
-        F.col("l_quantity").cast("long").alias("q"),
-    )
-    grid = rows.groupBy("s", "q").agg(F.count(F.lit(1)).alias("cnt"))
-    a = grid.filter(F.col("s") == "F").select("q", "cnt")
-    b = grid.filter(F.col("s") == "O").select(
-        F.col("q").alias("qb"), F.col("cnt").alias("cntb")
-    )
-
-    def placements(x, y, qx, qy, cx, cy):
-        j = x.join(F.broadcast(y), F.col(qy) <= F.col(qx), "left")
-        return j.groupBy(qx, cx).agg(
-            (
-                F.lit(2)
-                * F.coalesce(
-                    F.sum(F.when(F.col(qy) < F.col(qx), F.col(cy))), F.lit(0)
-                )
-                + F.coalesce(
-                    F.sum(F.when(F.col(qy) == F.col(qx), F.col(cy))), F.lit(0)
-                )
-            ).alias("p2")
-        )
-
-    pa = placements(a, b, "q", "qb", "cnt", "cntb")
-    pb = placements(
-        b.select(F.col("qb").alias("q"), F.col("cntb").alias("cnt")),
-        a.select(F.col("q").alias("qb"), F.col("cnt").alias("cntb")),
-        "q",
-        "qb",
-        "cnt",
-        "cntb",
-    )
-
-    def sums(p, pre):
-        return p.agg(
-            dec38(F.sum("cnt")).alias(f"{pre}n"),
-            dec38(F.sum(F.col("cnt") * F.col("p2"))).alias(f"{pre}s"),
-            F.sum(dec38(F.col("cnt")) * dec38(F.col("p2")) * dec38(F.col("p2"))).alias(
-                f"{pre}ss"
-            ),
-        )
-
-    s = sums(pa, "a_").crossJoin(F.broadcast(sums(pb, "b_")))
-    h = F.lit(100).cast("decimal(38,0)")
-    bq = s.select(
-        F.col("a_n").alias("m"),
-        F.col("b_n").alias("n"),
-        F.col("a_s").alias("sp2"),
-        F.col("b_s").alias("sq2"),
-        halfup_div(
-            h * (F.col("a_n") * F.col("a_ss") - F.col("a_s") * F.col("a_s")),
-            F.col("a_n"),
-        ).alias("b1"),
-        halfup_div(
-            h * (F.col("b_n") * F.col("b_ss") - F.col("b_s") * F.col("b_s")),
-            F.col("b_n"),
-        ).alias("b2"),
-        halfup_div(h * F.col("a_s") * F.col("b_s"), F.col("a_n") * F.col("b_n")).alias(
-            "b3"
-        ),
-    )
-    diff = F.col("sp2") - F.col("sq2")
-    sign = F.when(diff < 0, F.lit(-1)).otherwise(F.lit(1)).cast("decimal(38,0)")
-    den = F.col("b1") + F.col("b2") + F.col("b3")
-    return bq.select(
-        F.col("m").cast("long").alias("n_f"),
-        F.col("n").cast("long").alias("n_o"),
-        F.when(
-            den > 0,
-            round_big_int_ratio(
-                sign * F.lit(25).cast("decimal(38,0)") * diff * diff, den
-            ),
-        ).alias("u_signed_sq"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# 18. k-sample median test (quantity by priority)
-# ---------------------------------------------------------------------------
-
-
-def _ksample_median_oracle() -> str:
-    from ..functions.exact import sql_round_int_ratio
-
-    return f"""
-    WITH jn AS (
-      SELECT o.o_orderpriority AS g, CAST(l.l_quantity AS BIGINT) AS q
-      FROM lineitem l JOIN orders o ON o.o_orderkey = l.l_orderkey
-    ), grid AS (
-      SELECT g, q, CAST(count(*) AS BIGINT) AS cnt FROM jn GROUP BY g, q
-    ), vals AS (
-      SELECT q, CAST(sum(cnt) AS BIGINT) AS c FROM grid GROUP BY q
-    ), cum AS (
-      SELECT a.q, CAST(sum(b.c) AS BIGINT) AS cle
-      FROM vals a JOIN vals b ON b.q <= a.q GROUP BY a.q
-    ), nn AS (SELECT CAST(sum(c) AS BIGINT) AS n FROM vals),
-    med AS (
-      SELECT CAST(min(cum.q) AS BIGINT) AS med
-      FROM cum, nn WHERE cum.cle >= (nn.n + 1) // 2
-    ), cells AS (
-      SELECT g, CAST(sum(cnt) AS HUGEINT) AS n_g,
-             CAST(sum(CASE WHEN grid.q > med.med THEN cnt ELSE 0 END)
-                  AS HUGEINT) AS above
-      FROM grid, med GROUP BY g
-    ), marg AS (
-      SELECT CAST(sum(n_g) AS HUGEINT) AS n,
-             CAST(sum(above) AS HUGEINT) AS r_above
-      FROM cells
-    ), chi AS (
-      SELECT sum(
-        (CASE WHEN m.r_above > 0 THEN
-          ((2000000::HUGEINT * (c.above * m.n - c.n_g * m.r_above)
-            * (c.above * m.n - c.n_g * m.r_above)
-            + m.n * c.n_g * m.r_above)
-           // (2::HUGEINT * m.n * c.n_g * m.r_above)) ELSE 0 END)
-        + (CASE WHEN m.n - m.r_above > 0 THEN
-          ((2000000::HUGEINT * ((c.n_g - c.above) * m.n
-             - c.n_g * (m.n - m.r_above))
-            * ((c.n_g - c.above) * m.n - c.n_g * (m.n - m.r_above))
-            + m.n * c.n_g * (m.n - m.r_above))
-           // (2::HUGEINT * m.n * c.n_g * (m.n - m.r_above))) ELSE 0 END)
-        ) AS chi_q,
-        CAST(count(*) AS BIGINT) AS k
-      FROM cells c, marg m
-    )
-    SELECT c.g AS priority, CAST(c.n_g AS BIGINT) AS n,
-           CAST(c.above AS BIGINT) AS n_above,
-           {sql_round_int_ratio('CAST(c.above AS BIGINT)',
-                                'CAST(c.n_g AS BIGINT)')} AS frac_above,
-           m2.med AS grand_median,
-           ch.chi_q / 1000000.0 AS chi2_stat,
-           ch.k - 1 AS df
-    FROM cells c, med m2, chi ch
-    """
-
-
-@register("stats_k_sample_median_test", _ksample_median_oracle())
-def stats_k_sample_median_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """k-sample median test of l_quantity across the five order
-    priorities: dichotomize every observation at the GRAND median and
-    chi-square the resulting k×2 table — the k-group generalization
-    of stats_mood_median_discount (two groups) and the bluntest,
-    most assumption-free of the k-sample location tests (only the
-    dichotomy matters, so it survives arbitrary within-group shapes
-    where Kruskal-Wallis needs similar ones).
-
-    Exact path: the grand median is the nearest-rank value over the
-    ≤50-value quantity grid (bounded-domain cumulative); cell terms
-    (O·N − n_g·R)²/(N·n_g·R) quantize per cell at 1e-6 by half-up
-    integer division and SUM AS INT64 — one display division total.
-    The expected-count denominators use the exact margins, so the
-    statistic matches the textbook χ² on the dichotomized table.
-    Heavy work is the lineitem⋈orders scan to the (priority,
-    quantity) grid; everything after is ≤ 250 rows.
-    """
-    from ..functions.exact import round_int_ratio
-
-    t = Tables(spark, sf_dir)
-    jn = t.lineitem.join(
-        t.orders.select("o_orderkey", "o_orderpriority"),
-        t.lineitem.l_orderkey == F.col("o_orderkey"),
-    ).select(
-        F.col("o_orderpriority").alias("g"),
-        F.col("l_quantity").cast("long").alias("q"),
-    )
-    grid = jn.groupBy("g", "q").agg(F.count(F.lit(1)).alias("cnt"))
-    vals = grid.groupBy("q").agg(F.sum("cnt").alias("c"))
-    vb = vals.select(F.col("q").alias("q_b"), F.col("c").alias("c_b"))
-    cum = (
-        vals.join(F.broadcast(vb), F.col("q_b") <= F.col("q"))
-        .groupBy("q")
-        .agg(F.sum("c_b").alias("cle"))
-    )
-    nn = vals.agg(F.sum("c").alias("n"))
-    med = (
-        cum.crossJoin(F.broadcast(nn))
-        .filter(F.col("cle") >= ((F.col("n") + 1) - (F.col("n") + 1) % 2) / 2)
-        .agg(F.min("q").alias("med"))
-    )
-    cells = (
-        grid.crossJoin(F.broadcast(med))
-        .groupBy("g")
-        .agg(
-            dec38(F.sum("cnt")).alias("n_g"),
-            dec38(
-                F.sum(F.when(F.col("q") > F.col("med"), F.col("cnt")).otherwise(0))
-            ).alias("above"),
-        )
-    )
-    marg = cells.agg(
-        F.sum("n_g").alias("n"),
-        F.sum("above").alias("r_above"),
-        dec38(F.count(F.lit(1))).alias("k"),
-    )
-    wm = cells.crossJoin(F.broadcast(marg))
-
-    def cell_term(obs, rmarg):
-        dev = obs * F.col("n") - F.col("n_g") * rmarg
-        den = F.col("n") * F.col("n_g") * rmarg
-        a = F.lit(2000000).cast("decimal(38,0)") * dev * dev + den
-        b = F.lit(2).cast("decimal(38,0)") * den
-        return F.when(rmarg > 0, dec38((a - a % b) / b)).otherwise(
-            F.lit(0).cast("decimal(38,0)")
-        )
-
-    chi = wm.select(
-        (
-            cell_term(F.col("above"), F.col("r_above"))
-            + cell_term(
-                F.col("n_g") - F.col("above"), F.col("n") - F.col("r_above")
-            )
-        ).alias("t")
-    ).agg(F.sum("t").alias("chi_q"))
-    return (
-        cells.crossJoin(F.broadcast(med))
-        .crossJoin(F.broadcast(chi))
-        .crossJoin(F.broadcast(marg.select("k")))
-        .select(
-            F.col("g").alias("priority"),
-            F.col("n_g").cast("long").alias("n"),
-            F.col("above").cast("long").alias("n_above"),
-            round_int_ratio(
-                F.col("above").cast("long"), F.col("n_g").cast("long")
-            ).alias("frac_above"),
-            F.col("med").alias("grand_median"),
-            (F.col("chi_q").cast("long") / F.lit(1e6)).alias("chi2_stat"),
-            (F.col("k") - 1).cast("long").alias("df"),
-        )
-    )
 
 
 # ---------------------------------------------------------------------------

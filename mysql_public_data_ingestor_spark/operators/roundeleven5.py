@@ -21,7 +21,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.exact import dec38, halfup_div, sql_halfup_div
+from ..functions.exact import dec38, halfup_div, order_cents, sql_halfup_div
 from ..registry import register
 from ..tables import Tables
 from .sketches import _P, _sql_uhash, _uhash
@@ -324,7 +324,7 @@ def dq_benford_first_two_digits(spark: SparkSession, sf_dir: str) -> DataFrame:
     the static digit spine; everything after is 90-row algebra.
     """
     t = Tables(spark, sf_dir)
-    cents = F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")
+    cents = order_cents()
     v = t.orders.filter(F.col("o_totalprice").isNotNull()).select(
         cents.alias("cents")
     ).filter(F.col("cents") >= 10)

@@ -3,6 +3,10 @@
 Tests (`tests/test_roundfive.py`) run each query against its DuckDB
 oracle with the same canon/compare tools/check_correctness.py uses, plus the
 SinglePartition and no-cartesian plan sweeps.
+
+``stats_logistic_gd`` and ``stats_welch_anova`` live in
+``operators/stats_models.py``; ``stats_pareto_by_nation`` lives in
+``operators/stats_dist.py`` with the other stats queries.
 """
 
 from __future__ import annotations
@@ -10,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.exact import order_cents
 from ..functions.textnorm import whitespace_tokens
 from ..registry import register
 from ..tables import Tables
@@ -224,7 +229,7 @@ def agg_topk_mergeable(spark: SparkSession, sf_dir: str) -> DataFrame:
     o_orderkey tie-break at both levels).
     """
     t = Tables(spark, sf_dir)
-    cents = F.floor(F.col("o_totalprice") * F.lit(100.0) + F.lit(0.5)).cast("long")
+    cents = order_cents()
     base = t.orders.select(
         "o_orderkey",
         "o_custkey",
@@ -312,7 +317,7 @@ def dq_schema_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     size.
     """
     t = Tables(spark, sf_dir)
-    cents = F.floor(F.col("o_totalprice") * F.lit(100.0) + F.lit(0.5)).cast("long")
+    cents = order_cents()
     halves = t.orders.select(
         F.when(F.col("o_orderdate") < F.lit(DRIFT_SPLIT).cast("timestamp"), "base")
         .otherwise("current")
@@ -513,156 +518,6 @@ def similarity_ann_multiprobe_topk(spark: SparkSession, sf_dir: str) -> DataFram
         .filter(F.col("rnk") <= TOP_K)
         .select("query_id", "neighbor_id", "cosine", "rnk")
     )
-
-
-# ---------------------------------------------------------------------------
-# 6. Declarative logistic regression (fixed-step gradient descent)
-# ---------------------------------------------------------------------------
-
-LOGIT_STEPS = 3
-# lr = 0.5 expressed as an integer halving of the micro-unit gradient sum
-
-
-def logit_cte_chain() -> tuple[list[str], str, str]:
-    """The GD loop as an unrolled CTE list, plus scalar-subquery refs to
-    the FINAL step's micro-weights — shared by the ``stats_logistic_gd``
-    oracle and the round-7 diagnostics (deviance, Hosmer-Lemeshow) that
-    score with the trained weights."""
-    ctes, prev_w0, prev_w1, _ = _logit_parts()
-    return ctes, prev_w0, prev_w1
-
-
-def _logit_oracle() -> str:
-    """Unrolled-CTE twin of the GD loop: identical per-step quantized
-    integer weight updates, so every step's weights hash-match."""
-    ctes, _, _, selects = _logit_parts()
-    return "WITH " + ", ".join(ctes) + " " + " UNION ALL ".join(selects)
-
-
-def _logit_parts() -> tuple[list[str], str, str, list[str]]:
-    x = "CAST(CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT) AS DOUBLE) / 10000000.0"
-    y = "CASE WHEN o_orderpriority = '1-URGENT' THEN 1.0 ELSE 0.0 END"
-    ctes = ["base AS (SELECT " + x + " AS x, " + y + " AS y FROM orders)"]
-    prev_w0, prev_w1 = "0", "0"
-    selects = []
-    for k in range(1, LOGIT_STEPS + 1):
-        p = f"1.0 / (1.0 + exp(-(({prev_w0}) / 1000000.0 + ({prev_w1}) / 1000000.0 * x)))"
-        ctes.append(
-            f"""s{k} AS (
-              SELECT sum(CAST(floor(({p} - y) * 1000000.0 + 0.5) AS BIGINT)) AS s0,
-                     sum(CAST(floor(({p} - y) * x * 1000000.0 + 0.5) AS BIGINT)) AS s1,
-                     count(*) AS n
-              FROM base{"" if k == 1 else f", w{k-1}"})"""
-        )
-        ctes.append(
-            f"""w{k} AS (
-              SELECT CAST(({prev_w0}) - floor(CAST(s0 AS DOUBLE) / (2.0 * n) + 0.5)
-                     AS BIGINT) AS w0q,
-                     CAST(({prev_w1}) - floor(CAST(s1 AS DOUBLE) / (2.0 * n) + 0.5)
-                     AS BIGINT) AS w1q
-              FROM s{k})"""
-        )
-        prev_w0, prev_w1 = f"(SELECT w0q FROM w{k})", f"(SELECT w1q FROM w{k})"
-        selects.append(
-            f"SELECT CAST({k} AS BIGINT) AS step, w0q AS w0_micro, w1q AS w1_micro FROM w{k}"
-        )
-    return ctes, prev_w0, prev_w1, selects
-
-
-@register("stats_logistic_gd", oracle=_logit_oracle())
-def stats_logistic_gd(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Logistic regression (urgent-order propensity vs order value) by
-    THREE fixed gradient-descent steps, as declarative plans — the
-    iterative-model-training showpiece alongside ``ml_kmeans_lloyd``:
-    no driver-side weight collect, no RNG, bit-reproducible.
-
-    Reproducibility contract: weights live as int64 micro-units; each
-    step's gradient contributions are 1e-6-quantized per row BEFORE the
-    exact integer sum (order-independent under any partitioning), and
-    the weight update is the same integer halving on both engines. The
-    only float op is the sigmoid itself, computed from bit-identical
-    (micro-weight / 1e6) doubles — same ~1-ulp residual as documented
-    for the classifier scoring pack. Scale: one pruned 2-column scan
-    per step with a 2-value aggregate; the 1-row weight state
-    broadcasts into the next step (localCheckpointed so step K costs
-    one scan, not K). Output: the weight trajectory, one row per step.
-    """
-    t = Tables(spark, sf_dir)
-    out = [
-        w_df.select(
-            F.lit(k).cast("long").alias("step"),
-            F.col("w0q").alias("w0_micro"),
-            F.col("w1q").alias("w1_micro"),
-        )
-        for k, w_df in enumerate(logit_weight_steps(t), start=1)
-    ]
-    res = out[0]
-    for df in out[1:]:
-        res = res.unionByName(df)
-    return res
-
-
-def logit_base(t: Tables) -> DataFrame:
-    """The (x, y) training frame of the GD logistic model — x the
-    1e7-scaled exact-cents order value, y the urgent-priority label.
-    Shared by the training loop and the round-8 fit diagnostics so the
-    scoring expression is identical to the one trained on."""
-    cents = F.floor(F.col("o_totalprice") * F.lit(100.0) + F.lit(0.5)).cast("long")
-    return t.orders.select(
-        (cents.cast("double") / F.lit(1e7)).alias("x"),
-        F.when(F.col("o_orderpriority") == "1-URGENT", 1.0).otherwise(0.0).alias("y"),
-    )
-
-
-def logit_sigmoid(x: F.Column, w0q: F.Column, w1q: F.Column) -> F.Column:
-    """p = sigmoid(w0 + w1*x) off micro-unit weights — the exact
-    scoring expression of the training loop (identical doubles on both
-    engines; the oracle twin is the ``p`` string in `_logit_parts`)."""
-    z = w0q / F.lit(1e6) + w1q / F.lit(1e6) * x
-    return F.lit(1.0) / (F.lit(1.0) + F.exp(-z))
-
-
-def logit_weight_steps(t: Tables) -> list[DataFrame]:
-    """Per-step trained micro-weights as 1-row (w0q, w1q) DataFrames,
-    localCheckpointed so step K costs one scan. Shared by the
-    trajectory query above and `ml_logistic_fit_quality` (round 8),
-    which scores with ``steps[-1]``."""
-    base = logit_base(t)
-    w_df = None  # step-1 weights are the (0, 0) literals
-    steps: list[DataFrame] = []
-    for _ in range(LOGIT_STEPS):
-        if w_df is None:
-            joined = base.withColumn("w0q", F.lit(0).cast("long")).withColumn(
-                "w1q", F.lit(0).cast("long")
-            )
-        else:
-            joined = base.crossJoin(F.broadcast(w_df))
-        p = logit_sigmoid(F.col("x"), F.col("w0q"), F.col("w1q"))
-        g0 = F.floor((p - F.col("y")) * F.lit(1e6) + F.lit(0.5)).cast("long")
-        g1 = F.floor((p - F.col("y")) * F.col("x") * F.lit(1e6) + F.lit(0.5)).cast("long")
-        agg = joined.agg(
-            F.sum(g0).alias("s0"),
-            F.sum(g1).alias("s1"),
-            F.count(F.lit(1)).alias("n"),
-            F.first("w0q").alias("w0q"),
-            F.first("w1q").alias("w1q"),
-        )
-        w_df = agg.select(
-            (
-                F.col("w0q")
-                - F.floor(F.col("s0").cast("double") / (F.lit(2.0) * F.col("n")) + F.lit(0.5))
-            )
-            .cast("long")
-            .alias("w0q"),
-            (
-                F.col("w1q")
-                - F.floor(F.col("s1").cast("double") / (F.lit(2.0) * F.col("n")) + F.lit(0.5))
-            )
-            .cast("long")
-            .alias("w1q"),
-        ).localCheckpoint()
-        steps.append(w_df)
-    return steps
 
 
 # ---------------------------------------------------------------------------
@@ -998,7 +853,7 @@ def join_range_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
         bands = row if bands is None else bands.unionByName(row)
     o = t.orders.select(
         "o_orderkey",
-        F.floor(F.col("o_totalprice") * F.lit(100.0) + F.lit(0.5)).cast("long").alias("cents"),
+        order_cents().alias("cents"),
     ).withColumn("bucket", (F.col("cents") / F.lit(BAND_BUCKET)).cast("long"))
     joined = o.join(F.broadcast(bands), "bucket").where(
         (F.col("cents") >= F.col("lo")) & (F.col("cents") < F.col("hi"))
@@ -1304,131 +1159,6 @@ def text_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# 16. Welch's ANOVA (k-group mean comparison; extends stats_ttest_ab)
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "stats_welch_anova",
-    oracle="""
-    WITH q AS (
-      SELECT event_type,
-             CAST(floor(value * 1000000.0 + 0.5) AS BIGINT) AS v_u
-      FROM events
-    ), s AS (
-      SELECT event_type,
-             CAST(count(*) AS BIGINT) AS n,
-             CAST(sum(v_u) AS DOUBLE) AS sum_u,
-             CAST(sum(CAST(v_u AS HUGEINT) * v_u) AS DOUBLE) AS sumsq_u
-      FROM q GROUP BY event_type
-    ), g AS (
-      SELECT event_type, n,
-             sum_u / 1e6 / n AS mean_g,
-             (sumsq_u / 1e12 - (sum_u / 1e6) * (sum_u / 1e6) / n) / (n - 1) AS var_g
-      FROM s
-    ), w AS (
-      SELECT event_type, n, mean_g, var_g, n / var_g AS wt FROM g
-    ), tot AS (
-      SELECT CAST(count(*) AS BIGINT) AS k, sum(wt) AS w_sum,
-             sum(wt * mean_g) / sum(wt) AS grand_mean
-      FROM w
-    ), parts AS (
-      SELECT sum(wt * (mean_g - grand_mean) * (mean_g - grand_mean)) AS between_w,
-             sum((1 - wt / w_sum) * (1 - wt / w_sum) / (n - 1)) AS lambda_term
-      FROM w, tot GROUP BY w_sum
-    )
-    SELECT k,
-           CAST((SELECT sum(n) FROM s) AS BIGINT) AS n_total,
-           round(grand_mean, 6) AS grand_mean,
-           round((between_w / (k - 1))
-                 / (1 + 2.0 * (k - 2) / (k * k - 1.0) * lambda_term), 6) AS f_welch,
-           round((k * k - 1.0) / (3.0 * lambda_term), 6) AS df2
-    FROM tot, parts
-    """,
-)
-def stats_welch_anova(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Welch's heteroscedastic one-way ANOVA across ALL event types —
-    the k-group generalization of ``stats_ttest_ab`` (do the k event
-    types share a mean value, without assuming equal variances?).
-
-    Same exactness discipline as the t-test: every sufficient statistic
-    (n, sum, sum-of-squares) is an exact integer aggregate of
-    1e-6-quantized values (sum of squares in decimal(38,0) so 100 TB
-    cannot overflow), bit-identical under any partitioning; the F
-    statistic is then one deterministic float expression over the
-    k-row group table, rounded at 6dp on both engines. Shuffle: one
-    |event-types|-keyed aggregate; everything after runs on k rows.
-    """
-    t = Tables(spark, sf_dir)
-    v_u = F.floor(F.col("value") * F.lit(1e6) + F.lit(0.5)).cast("long")
-    s = (
-        t.events.select("event_type", v_u.alias("v_u"))
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("v_u").cast("double").alias("sum_u"),
-            # decimal BEFORE the square: v_u^2 overflows int64 once
-            # values carry web-scale magnitudes (the stats.py:868
-            # lesson, re-caught by the value-magnitude fuzz profile)
-            F.sum(
-                F.col("v_u").cast("decimal(38,0)") * F.col("v_u").cast("decimal(38,0)")
-            )
-            .cast("double")
-            .alias("sumsq_u"),
-        )
-    )
-    g = s.select(
-        "event_type",
-        "n",
-        (F.col("sum_u") / F.lit(1e6) / F.col("n")).alias("mean_g"),
-        (
-            (
-                F.col("sumsq_u") / F.lit(1e12)
-                - (F.col("sum_u") / F.lit(1e6)) * (F.col("sum_u") / F.lit(1e6)) / F.col("n")
-            )
-            / (F.col("n") - 1)
-        ).alias("var_g"),
-    ).withColumn("wt", F.col("n") / F.col("var_g"))
-    tot = g.agg(
-        F.count(F.lit(1)).alias("k"),
-        F.sum("wt").alias("w_sum"),
-        (F.sum(F.col("wt") * F.col("mean_g")) / F.sum("wt")).alias("grand_mean"),
-        F.sum("n").cast("long").alias("n_total"),
-    )
-    joined = g.crossJoin(F.broadcast(tot))
-    parts = joined.agg(
-        F.first("k").alias("k"),
-        F.first("n_total").alias("n_total"),
-        F.first("grand_mean").alias("grand_mean"),
-        F.sum(
-            F.col("wt") * (F.col("mean_g") - F.col("grand_mean")) * (F.col("mean_g") - F.col("grand_mean"))
-        ).alias("between_w"),
-        F.sum(
-            (F.lit(1.0) - F.col("wt") / F.col("w_sum"))
-            * (F.lit(1.0) - F.col("wt") / F.col("w_sum"))
-            / (F.col("n") - 1)
-        ).alias("lambda_term"),
-    )
-    kk = F.col("k").cast("double")
-    return parts.select(
-        F.col("k").cast("long").alias("k"),
-        "n_total",
-        F.round(F.col("grand_mean"), 6).alias("grand_mean"),
-        F.round(
-            (F.col("between_w") / (kk - 1))
-            / (
-                F.lit(1.0)
-                + F.lit(2.0) * (kk - 2) / (kk * kk - F.lit(1.0)) * F.col("lambda_term")
-            ),
-            6,
-        ).alias("f_welch"),
-        F.round((kk * kk - F.lit(1.0)) / (F.lit(3.0) * F.col("lambda_term")), 6).alias(
-            "df2"
-        ),
-    )
-
-
-# ---------------------------------------------------------------------------
 # 17. Classifier threshold sweep (PR table; completes the eval trio)
 # ---------------------------------------------------------------------------
 
@@ -1505,108 +1235,6 @@ def ml_confusion_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         round_int_ratio(F.col("tp"), F.greatest(F.col("tp") + F.col("fn"), F.lit(1))).alias(
             "recall_"
         ),
-    )
-
-
-def _round_big_int_ratio(num, den, dp: int = 6):
-    """Promoted to ``functions.exact.round_big_int_ratio`` (ADVICE r5);
-    kept as a delegating alias for existing call sites."""
-    from ..functions.exact import round_big_int_ratio
-
-    return round_big_int_ratio(num, den, dp)
-
-
-# ---------------------------------------------------------------------------
-# 18. Pareto concentration by nation (top-decile revenue share)
-# ---------------------------------------------------------------------------
-
-
-def _pareto_oracle() -> str:
-    from ..functions.exact import sql_round_big_int_ratio
-
-    share = sql_round_big_int_ratio("top_cents", "all_cents")
-    return f"""
-    WITH rev AS (
-      SELECT c.c_nationkey, o.o_custkey,
-             CAST(sum(CAST(floor(o.o_totalprice * 100.0 + 0.5) AS BIGINT)) AS BIGINT)
-               AS cents
-      FROM orders o JOIN customer c ON c.c_custkey = o.o_custkey
-      GROUP BY 1, 2
-    ), ranked AS (
-      SELECT c_nationkey, cents,
-             row_number() OVER (PARTITION BY c_nationkey
-                                ORDER BY cents DESC, o_custkey) AS rn,
-             CAST(count(*) OVER (PARTITION BY c_nationkey) AS BIGINT) AS n_cust
-      FROM rev
-    ), agg AS (
-      SELECT c_nationkey,
-             CAST(max(n_cust) AS BIGINT) AS n_customers,
-             CAST(ceil(max(n_cust) / 10.0) AS BIGINT) AS n_top,
-             CAST(sum(CASE WHEN rn <= ceil(n_cust / 10.0) THEN cents ELSE 0 END)
-                  AS BIGINT) AS top_cents,
-             CAST(sum(cents) AS BIGINT) AS all_cents
-      FROM ranked GROUP BY 1
-    )
-    SELECT n.n_name AS nation, n_customers, n_top, top_cents, all_cents,
-           {share} AS top_decile_share
-    FROM agg JOIN nation n ON n.n_nationkey = agg.c_nationkey
-    """
-
-
-@register("stats_pareto_by_nation", oracle=_pareto_oracle())
-def stats_pareto_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Revenue-concentration (Pareto/80-20) audit per nation: what
-    share of each nation's order revenue comes from its top decile of
-    customers — the concentration metric behind account-tiering and
-    whale-risk dashboards.
-
-    Scale: the customer-revenue rollup is one (nation, customer)
-    aggregate of exact cents; ranking and the decile cutoff are
-    PARTITIONED windows (per nation — never a global sort), and the
-    final frame is |nations| rows with an exact integer revenue ratio.
-    """
-    t = Tables(spark, sf_dir)
-    cents = F.floor(F.col("o_totalprice") * F.lit(100.0) + F.lit(0.5)).cast("long")
-    rev = (
-        t.orders.select("o_custkey", cents.alias("cents"))
-        .join(F.broadcast(t.customer.select("c_custkey", "c_nationkey")),
-              F.col("o_custkey") == F.col("c_custkey"))
-        .groupBy("c_nationkey", "o_custkey")
-        .agg(F.sum("cents").cast("long").alias("cents"))
-    )
-    w_rank = Window.partitionBy("c_nationkey").orderBy(
-        F.col("cents").desc(), F.col("o_custkey")
-    )
-    w_all = Window.partitionBy("c_nationkey")
-    ranked = rev.withColumn("rn", F.row_number().over(w_rank)).withColumn(
-        "n_cust", F.count(F.lit(1)).over(w_all).cast("long")
-    )
-    agg = ranked.groupBy("c_nationkey").agg(
-        F.max("n_cust").cast("long").alias("n_customers"),
-        F.ceil(F.max("n_cust") / F.lit(10.0)).cast("long").alias("n_top"),
-        F.sum(
-            F.when(F.col("rn") <= F.ceil(F.col("n_cust") / F.lit(10.0)), F.col("cents"))
-            .otherwise(0)
-        )
-        .cast("long")
-        .alias("top_cents"),
-        F.sum("cents").cast("long").alias("all_cents"),
-    )
-    return (
-        agg.join(
-            F.broadcast(t.nation.select("n_nationkey", "n_name")),
-            F.col("c_nationkey") == F.col("n_nationkey"),
-        )
-        .select(
-            F.col("n_name").alias("nation"),
-            "n_customers",
-            "n_top",
-            "top_cents",
-            "all_cents",
-            _round_big_int_ratio(F.col("top_cents"), F.col("all_cents")).alias(
-                "top_decile_share"
-            ),
-        )
     )
 
 

@@ -28,6 +28,10 @@ checked against the full 587-name registry inventory before design
 Reference parity note: the reference (Go ingestion pipeline,
 ``/root/reference/main.go``) has no analytics; these extend SURVEY
 §2.C warehouse statistics / time-series & product analytics.
+
+``stats_atkinson_index_nation``, ``stats_hoover_index_nation`` and
+``stats_lorenz_asymmetry`` live in ``operators/stats_dist.py`` with the
+other stats queries.
 """
 
 from __future__ import annotations
@@ -38,289 +42,7 @@ from pyspark.sql import functions as F
 from ..functions.exact import dec38, halfup_div, sql_halfup_div
 from ..registry import register
 from ..tables import Tables
-
-# ---------------------------------------------------------------------------
-# shared: per-nation order cents with per-nation totals broadcast back
-# ---------------------------------------------------------------------------
-
-_SQL_NATION_CENTS = """
-    c AS (
-      SELECT n.n_name,
-             CAST(floor(o.o_totalprice * 100.0 + 0.5) AS BIGINT) AS cents
-      FROM orders o
-      JOIN customer cu ON cu.c_custkey = o.o_custkey
-      JOIN nation n ON n.n_nationkey = cu.c_nationkey
-      WHERE o.o_totalprice IS NOT NULL AND o.o_totalprice > 0
-    ), tot AS (
-      SELECT n_name, CAST(count(*) AS HUGEINT) AS n,
-             CAST(sum(cents) AS HUGEINT) AS sy
-      FROM c GROUP BY n_name
-    )
-"""
-
-
-def _nation_cents(t: Tables) -> DataFrame:
-    """(n_name, cents) rows plus broadcast-joined per-nation (n, sy)
-    totals — the two-pass head all three inequality ops consume (SQL
-    twin ``_SQL_NATION_CENTS``)."""
-    cents = F.floor(F.col("o_totalprice") * F.lit(100.0) + F.lit(0.5)).cast("long")
-    c = (
-        t.orders.where(
-            F.col("o_totalprice").isNotNull() & (F.col("o_totalprice") > 0)
-        )
-        .join(
-            t.customer.select("c_custkey", "c_nationkey"),
-            t.orders.o_custkey == F.col("c_custkey"),
-        )
-        .join(
-            F.broadcast(t.nation.select("n_nationkey", "n_name")),
-            F.col("c_nationkey") == F.col("n_nationkey"),
-        )
-        .select("n_name", cents.alias("cents"))
-    )
-    tot = c.groupBy("n_name").agg(
-        dec38(F.count(F.lit(1))).alias("n"), F.sum(dec38(F.col("cents"))).alias("sy")
-    )
-    return c.join(F.broadcast(tot), "n_name")
-
-
-# ---------------------------------------------------------------------------
-# 1. Lorenz asymmetry coefficient per nation
-# ---------------------------------------------------------------------------
-
-
-def _lac_oracle() -> str:
-    return f"""
-    WITH {_SQL_NATION_CENTS.strip()}
-    , j AS (
-      SELECT c.n_name, c.cents, t.n, t.sy FROM c JOIN tot t USING (n_name)
-    ), a AS (
-      SELECT n_name, max(n) AS n, max(sy) AS sy,
-             CAST(sum(CASE WHEN n * cents < sy THEN 1 ELSE 0 END) AS HUGEINT) AS m,
-             CAST(sum(CASE WHEN n * cents < sy THEN cents ELSE 0 END) AS HUGEINT)
-               AS lm,
-             max(CASE WHEN n * cents < sy THEN cents END) AS xm,
-             min(CASE WHEN n * cents >= sy THEN cents END) AS xm1
-      FROM j GROUP BY n_name
-    )
-    SELECT n_name AS nation, CAST(n AS BIGINT) AS n_orders,
-           CASE WHEN xm IS NOT NULL AND xm1 > xm THEN
-             CAST(floor((
-               (CAST(m AS DOUBLE)
-                + CAST(sy - n * xm AS DOUBLE) / CAST(n * (xm1 - xm) AS DOUBLE))
-               / CAST(n AS DOUBLE)
-               + (CAST(lm AS DOUBLE)
-                  + (CAST(sy - n * xm AS DOUBLE) / CAST(n * (xm1 - xm) AS DOUBLE))
-                    * CAST(xm1 AS DOUBLE))
-                 / CAST(sy AS DOUBLE)
-             ) * 1000000.0::DOUBLE + 0.5) AS BIGINT)
-           END AS lorenz_asymmetry_micro
-    FROM a ORDER BY nation
-    """
-
-
-@register("stats_lorenz_asymmetry", oracle=_lac_oracle())
-def stats_lorenz_asymmetry(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Lorenz asymmetry coefficient S (Damgaard & Weiner 2000) of
-    order revenue per nation: S = F(mu) + L(mu), the sum of the
-    population share and the revenue share held by orders below the
-    mean, with linear interpolation at the mean. ``stats_gini_by_nation``
-    prices HOW MUCH inequality; S says WHERE it lives — S > 1 means
-    the inequality is driven by a few very large orders (the Lorenz
-    curve's kink sits above the axis of symmetry), S < 1 by many very
-    small ones. Two nations with identical Gini and opposite S need
-    opposite risk treatments.
-
-    Exactness: the below-mean classification is the exact integer
-    comparison n*cents < sum (no division); counts, below-mean sums
-    and the straddling order statistics x_m / x_m+1 are exact; the
-    interpolation delta and the final S are one mirrored IEEE double
-    expression off the exact integers, quantized once at micro.
-    Degenerate nations (all orders equal) yield NULL.
-
-    Scale shape: one fact scan to per-nation totals (broadcast back),
-    one conditional re-aggregate; |nations| rows out.
-    """
-    t = Tables(spark, sf_dir)
-    j = _nation_cents(t)
-    below = F.col("n") * F.col("cents") < F.col("sy")
-    a = j.groupBy("n_name").agg(
-        F.max("n").alias("n"),
-        F.max("sy").alias("sy"),
-        F.sum(F.when(below, 1).otherwise(0)).cast("decimal(38,0)").alias("m"),
-        F.sum(F.when(below, dec38(F.col("cents"))).otherwise(F.lit(0).cast("decimal(38,0)"))).alias("lm"),
-        F.max(F.when(below, F.col("cents"))).alias("xm"),
-        F.min(F.when(~below, F.col("cents"))).alias("xm1"),
-    )
-    delta = (F.col("sy") - F.col("n") * F.col("xm")).cast("double") / (
-        F.col("n") * (dec38(F.col("xm1")) - F.col("xm"))
-    ).cast("double")
-    s = (F.col("m").cast("double") + delta) / F.col("n").cast("double") + (
-        F.col("lm").cast("double") + delta * F.col("xm1").cast("double")
-    ) / F.col("sy").cast("double")
-    return a.select(
-        F.col("n_name").alias("nation"),
-        F.col("n").cast("long").alias("n_orders"),
-        F.when(
-            F.col("xm").isNotNull() & (F.col("xm1") > F.col("xm")),
-            F.floor(s * F.lit(1e6) + F.lit(0.5)).cast("long"),
-        ).alias("lorenz_asymmetry_micro"),
-    ).orderBy("nation")
-
-
-# ---------------------------------------------------------------------------
-# 2. Atkinson index (eps = 1/2 and 2) per nation
-# ---------------------------------------------------------------------------
-
-ATK_RECIP_SCALE = 1_000_000_000_000  # pico-scale reciprocal quantization
-ATK_SQRT_SCALE = 1_000_000           # micro-scale sqrt quantization
-
-
-def _atkinson_oracle() -> str:
-    hd = sql_halfup_div
-    return f"""
-    WITH {_SQL_NATION_CENTS.strip()}
-    , q AS (
-      SELECT c.n_name, t.n, t.sy,
-             CAST(sum({hd(f'{ATK_RECIP_SCALE}::HUGEINT', 'c.cents')})
-                  AS HUGEINT) AS sr,
-             CAST(sum(CAST(floor(sqrt(CAST(c.cents AS DOUBLE))
-                                 * {ATK_SQRT_SCALE}.0::DOUBLE + 0.5) AS BIGINT))
-                  AS HUGEINT) AS ss
-      FROM c JOIN tot t USING (n_name)
-      GROUP BY c.n_name, t.n, t.sy
-    )
-    SELECT n_name AS nation, CAST(n AS BIGINT) AS n_orders,
-           CAST(floor((1.0::DOUBLE
-                       - (CAST(ss AS DOUBLE)
-                          / (CAST(n AS DOUBLE) * {ATK_SQRT_SCALE}.0::DOUBLE))
-                         * (CAST(ss AS DOUBLE)
-                            / (CAST(n AS DOUBLE) * {ATK_SQRT_SCALE}.0::DOUBLE))
-                         * CAST(n AS DOUBLE) / CAST(sy AS DOUBLE))
-                      * 1000000.0::DOUBLE + 0.5) AS BIGINT) AS atkinson_half_micro,
-           CAST(1000000 - {hd(f'1000000::HUGEINT * n * n * {ATK_RECIP_SCALE}',
-                              'sr * sy')} AS BIGINT) AS atkinson_2_micro
-    FROM q ORDER BY nation
-    """
-
-
-@register("stats_atkinson_index_nation", oracle=_atkinson_oracle())
-def stats_atkinson_index_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Atkinson welfare-based inequality index (Atkinson 1970) of
-    order revenue per nation at two aversion levels with closed forms
-    that need NO exp/pow: eps = 1/2 — A = 1 - (mean sqrt(x))^2 / mu —
-    and eps = 2 — A = 1 - harmonic_mean/mu. Gini weighs all transfers
-    equally; Atkinson's eps dials how much the bottom matters (eps=2
-    is dominated by the smallest orders), and 1-A is literally the
-    fraction of total revenue that could be discarded if it were
-    distributed equally at the same welfare. The eps spread beside
-    ``stats_gini_by_nation`` and ``stats_theil_index_nation``
-    completes the inequality shelf's sensitivity axis.
-
-    Exactness: the sqrt path quantizes floor(sqrt(cents)*1e6 + 0.5)
-    per row (sqrt is IEEE correctly rounded — identical in both
-    engines) and sums exactly; the harmonic path quantizes the
-    reciprocal at pico scale with a half-up integer division per row
-    and sums exactly; A(2) is then ONE exact half-up micro ratio and
-    A(1/2) one mirrored double expression, quantized at micro.
-
-    Scale shape: one fact scan to per-nation totals (broadcast back),
-    one re-aggregate of two quantized per-row terms; |nations| rows.
-    """
-    t = Tables(spark, sf_dir)
-    j = _nation_cents(t)
-    recip = halfup_div(
-        F.lit(ATK_RECIP_SCALE).cast("decimal(38,0)"), dec38(F.col("cents"))
-    )
-    sqq = F.floor(
-        F.sqrt(F.col("cents").cast("double")) * F.lit(float(ATK_SQRT_SCALE))
-        + F.lit(0.5)
-    ).cast("long")
-    q = j.groupBy("n_name", "n", "sy").agg(
-        F.sum(recip).alias("sr"), F.sum(dec38(sqq)).alias("ss")
-    )
-    nd = F.col("n").cast("double")
-    msqrt = F.col("ss").cast("double") / (nd * F.lit(float(ATK_SQRT_SCALE)))
-    a_half = F.lit(1.0) - msqrt * msqrt * nd / F.col("sy").cast("double")
-    m6 = F.lit(1_000_000).cast("decimal(38,0)")
-    return q.select(
-        F.col("n_name").alias("nation"),
-        F.col("n").cast("long").alias("n_orders"),
-        F.floor(a_half * F.lit(1e6) + F.lit(0.5)).cast("long").alias(
-            "atkinson_half_micro"
-        ),
-        (
-            F.lit(1_000_000)
-            - halfup_div(
-                m6
-                * F.col("n")
-                * F.col("n")
-                * F.lit(ATK_RECIP_SCALE).cast("decimal(38,0)"),
-                F.col("sr") * F.col("sy"),
-            )
-        )
-        .cast("long")
-        .alias("atkinson_2_micro"),
-    ).orderBy("nation")
-
-
-# ---------------------------------------------------------------------------
-# 3. Hoover / Robin-Hood index per nation
-# ---------------------------------------------------------------------------
-
-
-def _hoover_oracle() -> str:
-    hd = sql_halfup_div
-    return f"""
-    WITH {_SQL_NATION_CENTS.strip()}
-    , a AS (
-      SELECT c.n_name, max(t.n) AS n, max(t.sy) AS sy,
-             CAST(sum(abs(t.n * c.cents - t.sy)) AS HUGEINT) AS sad
-      FROM c JOIN tot t USING (n_name)
-      GROUP BY c.n_name
-    )
-    SELECT n_name AS nation, CAST(n AS BIGINT) AS n_orders,
-           CAST({hd('1000000::HUGEINT * sad', '2 * n * sy')} AS BIGINT)
-             AS hoover_micro
-    FROM a ORDER BY nation
-    """
-
-
-@register("stats_hoover_index_nation", oracle=_hoover_oracle())
-def stats_hoover_index_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hoover (Robin-Hood) index of order revenue per nation: half the
-    relative mean absolute deviation, H = sum|x_i - mu| / (2 sum x) —
-    the exact fraction of total revenue that would have to be taken
-    from above-average orders and given to below-average ones to
-    equalize. It is also the maximum vertical gap between the Lorenz
-    curve and the diagonal, so beside ``stats_gini_by_nation`` (the
-    area) and ``stats_lorenz_asymmetry`` (the skew) it pins the
-    curve's third geometric invariant.
-
-    Exactness: |n*cents - sum| is exact integer arithmetic per row
-    (no division before the sum); ONE half-up micro division total.
-
-    Scale shape: one fact scan to per-nation totals (broadcast back),
-    one exact re-aggregate; |nations| rows out.
-    """
-    t = Tables(spark, sf_dir)
-    j = _nation_cents(t)
-    a = j.groupBy("n_name").agg(
-        F.max("n").alias("n"),
-        F.max("sy").alias("sy"),
-        F.sum(F.abs(F.col("n") * F.col("cents") - F.col("sy"))).alias("sad"),
-    )
-    m6 = F.lit(1_000_000).cast("decimal(38,0)")
-    return a.select(
-        F.col("n_name").alias("nation"),
-        F.col("n").cast("long").alias("n_orders"),
-        halfup_div(
-            m6 * F.col("sad"),
-            F.lit(2).cast("decimal(38,0)") * F.col("n") * F.col("sy"),
-        )
-        .cast("long")
-        .alias("hoover_micro"),
-    ).orderBy("nation")
+from .daily import calendar_rank
 
 # ---------------------------------------------------------------------------
 # 4. Theil U forecast accuracy of the seasonal-naive weekly forecast
@@ -530,12 +252,7 @@ def events_ami_lag_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = t.events.groupBy(F.to_date("ts").alias("day")).agg(
         dec38(F.count(F.lit(1))).alias("y")
     )
-    b0 = daily.select(F.col("day").alias("day_b"))
-    idx = (
-        daily.join(F.broadcast(b0), F.col("day_b") <= F.col("day"))
-        .groupBy("day", "y")
-        .agg(F.count(F.lit(1)).cast("long").alias("k"))
-    )
+    idx = calendar_rank(daily).withColumn("k", F.col("k").cast("long"))
     vals = idx.groupBy("y").agg(F.count(F.lit(1)).cast("long").alias("cnt"))
     wv = Window.orderBy("y").rowsBetween(Window.unboundedPreceding, 0)
     cumv = vals.select("y", F.sum("cnt").over(wv).alias("cle"))

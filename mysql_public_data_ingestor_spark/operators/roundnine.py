@@ -17,6 +17,10 @@ oracle twin per query.
 
 ``stats_page_hinkley_orders`` lives in ``operators/daily_change.py``
 with the other daily-series queries.
+
+``stats_ansari_bradley_quantity`` and ``stats_cvm_two_sample`` live in
+``operators/stats_rank.py``; ``stats_two_way_anova_price`` lives in
+``operators/stats_models.py`` with the other stats queries.
 """
 
 from __future__ import annotations
@@ -25,104 +29,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions.exact import dec38
+from ..functions.exact import dec38, order_cents
 from ..registry import register
 from ..tables import Tables
-
-
-# ---------------------------------------------------------------------------
-# 1. Cramér-von Mises two-sample test: quantity, returned vs non-returned
-# ---------------------------------------------------------------------------
-
-
-def _cvm_oracle() -> str:
-    from ..functions.exact import sql_round_big_int_ratio
-
-    return f"""
-    WITH c AS (
-      SELECT l_returnflag AS g, CAST(l_quantity AS BIGINT) AS v
-      FROM lineitem WHERE l_returnflag IN ('R', 'N') AND l_quantity IS NOT NULL
-    ), dv AS (
-      SELECT v,
-             CAST(sum(CASE WHEN g = 'R' THEN 1 ELSE 0 END) AS BIGINT) AS cx,
-             CAST(sum(CASE WHEN g = 'N' THEN 1 ELSE 0 END) AS BIGINT) AS cy
-      FROM c GROUP BY v
-    ), cum AS (
-      SELECT v, cx, cy,
-             sum(cx) OVER (ORDER BY v) AS cumx,
-             sum(cy) OVER (ORDER BY v) AS cumy,
-             sum(cx) OVER () AS n, sum(cy) OVER () AS m
-      FROM dv
-    ), s AS (
-      SELECT CAST(max(n) AS BIGINT) AS n, CAST(max(m) AS BIGINT) AS m,
-             CAST(sum((cx + cy)::HUGEINT
-                      * (cumx::HUGEINT * m - cumy::HUGEINT * n)
-                      * (cumx::HUGEINT * m - cumy::HUGEINT * n)) AS HUGEINT)
-               AS num
-      FROM cum
-    )
-    SELECT n, m,
-           {sql_round_big_int_ratio(
-               'num',
-               '(n + m)::HUGEINT * (n + m) * n * m', 9)} AS t_cvm
-    FROM s
-    """
-
-
-@register("stats_cvm_two_sample", oracle=_cvm_oracle())
-def stats_cvm_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cramér-von Mises two-sample statistic on line quantity between
-    returned ('R') and non-returned ('N') lines: the tie-adapted
-    quadratic ECDF distance T = (n·m/N^2) * sum_k p_k-weighted
-    (F_n(v_k) - G_m(v_k))^2, evaluated over the pooled distinct-value
-    domain — the integral companion of the KS supremum test
-    (``stats_ks_two_sample``): KS sees the single worst gap, CvM sees
-    the accumulated gap, so they disagree exactly when distributions
-    differ in the body vs at one quantile.
-
-    Exactness: both ECDFs are integer cumulatives over the <= 50
-    distinct quantity values; the squared difference is computed on
-    the nm-scaled integer diff = cumx*m - cumy*n, so the whole
-    statistic is ONE exact decimal ratio num / (N^2*n*m) quantized
-    half-up 1e-9. One scan, one bounded ordered pass — nothing
-    row-scaled after the partial aggregation.
-    """
-    from ..functions.exact import round_big_int_ratio
-
-    t = Tables(spark, sf_dir)
-    c = t.lineitem.filter(
-        F.col("l_returnflag").isin("R", "N") & F.col("l_quantity").isNotNull()
-    ).select(F.col("l_returnflag").alias("g"), F.col("l_quantity").cast("long").alias("v"))
-    dv = c.groupBy("v").agg(
-        F.sum(F.when(F.col("g") == "R", 1).otherwise(0)).alias("cx"),
-        F.sum(F.when(F.col("g") == "N", 1).otherwise(0)).alias("cy"),
-    )
-    w_ord = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, 0)
-    w_all = Window.orderBy("v").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    cum = dv.select(
-        "cx",
-        "cy",
-        F.sum("cx").over(w_ord).alias("cumx"),
-        F.sum("cy").over(w_ord).alias("cumy"),
-        F.sum("cx").over(w_all).alias("n"),
-        F.sum("cy").over(w_all).alias("m"),
-    )
-    diff = dec38(F.col("cumx")) * F.col("m") - dec38(F.col("cumy")) * F.col("n")
-    s = cum.select(
-        "n", "m", (dec38(F.col("cx") + F.col("cy")) * diff * diff).alias("term")
-    ).groupBy().agg(
-        F.max("n").alias("n"), F.max("m").alias("m"), F.sum("term").alias("num")
-    )
-    big_n = dec38(F.col("n") + F.col("m"))
-    return s.select(
-        "n",
-        "m",
-        round_big_int_ratio(
-            F.col("num"), big_n * big_n * F.col("n") * F.col("m"), 9
-        ).alias("t_cvm"),
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -740,99 +649,6 @@ def ml_auc_jackknife_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# 10. Ansari-Bradley scale test: quantity dispersion, returned vs rest
-# ---------------------------------------------------------------------------
-
-
-def _ansari_oracle() -> str:
-    return """
-    WITH c AS (
-      SELECT l_returnflag AS g, CAST(l_quantity AS BIGINT) AS v
-      FROM lineitem WHERE l_returnflag IN ('R', 'N') AND l_quantity IS NOT NULL
-    ), dv AS (
-      SELECT v,
-             CAST(sum(CASE WHEN g = 'R' THEN 1 ELSE 0 END) AS BIGINT) AS cx,
-             CAST(sum(CASE WHEN g = 'N' THEN 1 ELSE 0 END) AS BIGINT) AS cy
-      FROM c GROUP BY v
-    ), cum AS (
-      SELECT v, cx, cy,
-             2 * (sum(cx + cy) OVER (ORDER BY v) - (cx + cy)) + (cx + cy) + 1
-               AS r2,
-             sum(cx) OVER () AS n, sum(cy) OVER () AS m
-      FROM dv
-    ), scored AS (
-      SELECT cx, cy, n, m,
-             least(r2, 2 * (n + m + 1) - r2) AS s2
-      FROM cum
-    )
-    SELECT CAST(max(n) AS BIGINT) AS n,
-           CAST(max(m) AS BIGINT) AS m,
-           CAST(sum(cx * s2) AS BIGINT) AS ab2,
-           CAST(CASE WHEN (max(n) + max(m)) % 2 = 0
-                THEN max(n) * (max(n) + max(m) + 2) / 2
-                ELSE max(n) * (max(n) + max(m) + 1) * (max(n) + max(m) + 1)
-                     / (2 * (max(n) + max(m))) END AS BIGINT) AS ab2_null_mean
-    FROM scored
-    """
-
-
-@register("stats_ansari_bradley_quantity", oracle=_ansari_oracle())
-def stats_ansari_bradley_quantity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ansari-Bradley rank SCALE test on quantity between returned
-    ('R') and non-returned ('N') lines: rank from both ends inward
-    (score = min(rank, N+1-rank), small scores at the extremes), sum
-    the scores of sample 1 — a low sum means sample 1 sits in the
-    tails, i.e. has larger dispersion. The scale companion of the
-    location tests (Mann-Whitney/Mood): same rank machinery, opposite
-    question; Levene tests scale via moments, AB via ranks.
-
-    Convention (documented because ties matter): mid-ranks on the
-    pooled distinct-value domain, kept exact by DOUBLED ranks
-    (2*cum_before + c + 1) and doubled scores s2 = min(r2, 2(N+1)-r2),
-    so AB2 = 2*AB is an exact integer; the no-tie null mean (doubled,
-    parity-dependent closed form) is reported alongside for the
-    direction read. Ranking happens on the <= 50-value domain —
-    nothing row-scaled after the partial aggregation.
-    """
-    t = Tables(spark, sf_dir)
-    c = t.lineitem.filter(
-        F.col("l_returnflag").isin("R", "N") & F.col("l_quantity").isNotNull()
-    ).select(F.col("l_returnflag").alias("g"), F.col("l_quantity").cast("long").alias("v"))
-    dv = c.groupBy("v").agg(
-        F.sum(F.when(F.col("g") == "R", 1).otherwise(0)).alias("cx"),
-        F.sum(F.when(F.col("g") == "N", 1).otherwise(0)).alias("cy"),
-    )
-    w_ord = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, 0)
-    w_all = Window.orderBy("v").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    ct = F.col("cx") + F.col("cy")
-    cum = dv.select(
-        "cx",
-        "cy",
-        (2 * (F.sum(ct).over(w_ord) - ct) + ct + 1).alias("r2"),
-        F.sum("cx").over(w_all).alias("n"),
-        F.sum("cy").over(w_all).alias("m"),
-    )
-    s2 = F.least(F.col("r2"), 2 * (F.col("n") + F.col("m") + 1) - F.col("r2"))
-    scored = cum.select("cx", "n", "m", s2.alias("s2"))
-    agg = scored.agg(
-        F.max("n").alias("n"),
-        F.max("m").alias("m"),
-        F.sum(F.col("cx") * F.col("s2")).alias("ab2"),
-    )
-    n, m = F.col("n"), F.col("m")
-    big = n + m
-    even_mean = n * (big + 2)
-    odd_mean = n * (big + 1) * (big + 1)
-    mean2 = F.when(
-        big % 2 == 0,
-        ((even_mean - even_mean % 2) / 2).cast("long"),
-    ).otherwise(((odd_mean - odd_mean % (2 * big)) / (2 * big)).cast("long"))
-    return agg.select("n", "m", "ab2", mean2.alias("ab2_null_mean"))
-
-
-# ---------------------------------------------------------------------------
 # 12. DAU/MAU stickiness per month
 # ---------------------------------------------------------------------------
 
@@ -1136,203 +952,6 @@ def relational_skyline_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("price", "partkey")
     )
-
-
-# ---------------------------------------------------------------------------
-# 16. Two-way ANOVA: price by return flag x order priority
-# ---------------------------------------------------------------------------
-
-
-def _anova2_oracle() -> str:
-    hup = "(2 * ({num}) * 1000000 + ({den})) // (2::HUGEINT * ({den}))"
-    t2n = lambda T, n: hup.format(num=f"({T})::HUGEINT * ({T})", den=n)  # noqa: E731
-    return f"""
-    WITH c AS (
-      SELECT l.l_returnflag AS fa, o.o_orderpriority AS fb,
-             CAST(floor(l.l_extendedprice) AS BIGINT) AS x
-      FROM lineitem l JOIN orders o ON o.o_orderkey = l.l_orderkey
-      WHERE l.l_extendedprice IS NOT NULL
-    ), cells AS (
-      SELECT fa, fb, CAST(count(*) AS BIGINT) AS n_ab,
-             CAST(sum(x::HUGEINT) AS HUGEINT) AS t_ab,
-             CAST(sum(x::HUGEINT * x) AS HUGEINT) AS sx2_ab
-      FROM c GROUP BY fa, fb
-    ), qcell AS (
-      SELECT fa, fb, n_ab, t_ab, sx2_ab,
-             {t2n('t_ab', 'n_ab')} AS q_ab
-      FROM cells
-    ), a AS (
-      SELECT fa, CAST(sum(n_ab) AS BIGINT) AS n_a,
-             CAST(sum(t_ab) AS HUGEINT) AS t_a
-      FROM cells GROUP BY fa
-    ), qa AS (SELECT fa, {t2n('t_a', 'n_a')} AS q_a FROM a),
-    b AS (
-      SELECT fb, CAST(sum(n_ab) AS BIGINT) AS n_b,
-             CAST(sum(t_ab) AS HUGEINT) AS t_b
-      FROM cells GROUP BY fb
-    ), qb AS (SELECT fb, {t2n('t_b', 'n_b')} AS q_b FROM b),
-    tot AS (
-      SELECT CAST(sum(n_ab) AS BIGINT) AS n,
-             CAST(sum(t_ab) AS HUGEINT) AS t,
-             CAST(sum(sx2_ab) AS HUGEINT) AS sx2,
-             CAST(count(*) AS BIGINT) AS n_cells,
-             CAST(count(DISTINCT fa) AS BIGINT) AS ka,
-             CAST(count(DISTINCT fb) AS BIGINT) AS kb
-      FROM cells
-    ), q AS (
-      SELECT tot.*, {t2n('t', 'n')} AS q_t,
-             (SELECT CAST(sum(q_ab) AS HUGEINT) FROM qcell) AS q_cells,
-             (SELECT CAST(sum(q_a) AS HUGEINT) FROM qa) AS q_as,
-             (SELECT CAST(sum(q_b) AS HUGEINT) FROM qb) AS q_bs
-      FROM tot
-    ), ss AS (
-      SELECT ka - 1 AS df_a, kb - 1 AS df_b,
-             (ka - 1) * (kb - 1) AS df_ab,
-             n - n_cells AS df_e, n - 1 AS df_t,
-             greatest(q_as - q_t, 0) AS ss_a_u,
-             greatest(q_bs - q_t, 0) AS ss_b_u,
-             greatest(q_cells - q_as - q_bs + q_t, 0) AS ss_ab_u,
-             greatest(sx2 * 1000000 - q_cells, 0) AS ss_e_u,
-             greatest(sx2 * 1000000 - q_t, 0) AS ss_t_u
-      FROM q
-    ), rows_ AS (
-      SELECT 'A:return_flag' AS source, df_a AS df, ss_a_u AS ss_u,
-             df_e, ss_e_u FROM ss
-      UNION ALL SELECT 'B:order_priority', df_b, ss_b_u, df_e, ss_e_u FROM ss
-      UNION ALL SELECT 'AxB', df_ab, ss_ab_u, df_e, ss_e_u FROM ss
-      UNION ALL SELECT 'error', df_e, ss_e_u, df_e, ss_e_u FROM ss
-      UNION ALL SELECT 'total', df_t, ss_t_u, df_e, ss_e_u FROM ss
-    )
-    SELECT source, CAST(df AS BIGINT) AS df,
-           CAST(ss_u AS VARCHAR) AS ss_micro_units,
-           CAST((2 * ss_u + df::HUGEINT * 1000) // (2::HUGEINT * df * 1000)
-             AS VARCHAR) AS ms_milli_units,
-           CASE WHEN source IN ('A:return_flag', 'B:order_priority', 'AxB')
-                THEN CAST((2 * (ss_u * df_e * 1000000)
-                           + ss_e_u::HUGEINT * df)
-                      // (2::HUGEINT * ss_e_u * df) AS BIGINT) / 1000000.0
-           END AS f_stat
-    FROM rows_ ORDER BY source
-    """
-
-
-@register("stats_two_way_anova_price", oracle=_anova2_oracle())
-def stats_two_way_anova_price(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-way ANOVA of line price by return flag (3 levels) x order
-    priority (5 levels): the full sums-of-squares table (A, B, AxB
-    interaction, error, total) with degrees of freedom, mean squares
-    and F statistics — extending the one-way family (Welch ANOVA,
-    Kruskal-Wallis) to factorial designs, the "does the discount
-    effect differ by priority" question.
-
-    Convention (unbalanced data): classical method-of-moments sums
-    SS_A = sum T_a^2/n_a - T^2/N etc., with each T^2/n term quantized
-    half-up to 1e-6 BEFORE differencing (deterministic cross-engine;
-    the raw T^2 products need int128/decimal). Everything reduces on
-    the 15-cell (flag x priority) grid from ONE fact-join scan; the
-    F ratios are one double division of quantized values, floor-
-    half-up displayed.
-    """
-    t = Tables(spark, sf_dir)
-    c = (
-        t.lineitem.filter(F.col("l_extendedprice").isNotNull())
-        .join(
-            t.orders.select("o_orderkey", "o_orderpriority"),
-            t.lineitem.l_orderkey == F.col("o_orderkey"),
-        )
-        .select(
-            F.col("l_returnflag").alias("fa"),
-            F.col("o_orderpriority").alias("fb"),
-            F.floor(F.col("l_extendedprice")).cast("long").alias("x"),
-        )
-    )
-    cells = c.groupBy("fa", "fb").agg(
-        F.count(F.lit(1)).alias("n_ab"),
-        F.sum(dec38(F.col("x"))).alias("t_ab"),
-        F.sum(dec38(F.col("x")) * F.col("x")).alias("sx2_ab"),
-    )
-
-    def q_term(tcol, ncol):
-        a = F.lit(2).cast("decimal(38,0)") * (tcol * tcol * F.lit(10**6)) + ncol
-        b = F.lit(2).cast("decimal(38,0)") * ncol
-        return ((a - a % b) / b).cast("decimal(38,0)")
-
-    qcell = cells.select(q_term(F.col("t_ab"), F.col("n_ab")).alias("q_ab"))
-    a = cells.groupBy("fa").agg(
-        F.sum("n_ab").alias("n_a"), F.sum("t_ab").alias("t_a")
-    )
-    qa = a.select(q_term(F.col("t_a"), F.col("n_a")).alias("q_a"))
-    b = cells.groupBy("fb").agg(
-        F.sum("n_ab").alias("n_b"), F.sum("t_ab").alias("t_b")
-    )
-    qb = b.select(q_term(F.col("t_b"), F.col("n_b")).alias("q_b"))
-    tot = cells.agg(
-        F.sum("n_ab").alias("n"),
-        F.sum("t_ab").alias("t"),
-        F.sum("sx2_ab").alias("sx2"),
-        F.count(F.lit(1)).alias("n_cells"),
-        F.countDistinct("fa").alias("ka"),
-        F.countDistinct("fb").alias("kb"),
-    )
-    q = (
-        tot.withColumn("q_t", q_term(F.col("t"), F.col("n")))
-        .crossJoin(F.broadcast(qcell.agg(F.sum("q_ab").alias("q_cells"))))
-        .crossJoin(F.broadcast(qa.agg(F.sum("q_a").alias("q_as"))))
-        .crossJoin(F.broadcast(qb.agg(F.sum("q_b").alias("q_bs"))))
-    )
-    zero = F.lit(0).cast("decimal(38,0)")
-    ss = q.select(
-        (F.col("ka") - 1).alias("df_a"),
-        (F.col("kb") - 1).alias("df_b"),
-        ((F.col("ka") - 1) * (F.col("kb") - 1)).alias("df_ab"),
-        (F.col("n") - F.col("n_cells")).alias("df_e"),
-        (F.col("n") - 1).alias("df_t"),
-        F.greatest(F.col("q_as") - F.col("q_t"), zero).alias("ss_a_u"),
-        F.greatest(F.col("q_bs") - F.col("q_t"), zero).alias("ss_b_u"),
-        F.greatest(
-            F.col("q_cells") - F.col("q_as") - F.col("q_bs") + F.col("q_t"), zero
-        ).alias("ss_ab_u"),
-        F.greatest(F.col("sx2") * F.lit(10**6) - F.col("q_cells"), zero).alias(
-            "ss_e_u"
-        ),
-        F.greatest(F.col("sx2") * F.lit(10**6) - F.col("q_t"), zero).alias("ss_t_u"),
-    )
-    rows = ss.select(
-        F.expr(
-            "stack(5,"
-            " 'A:return_flag', df_a, ss_a_u,"
-            " 'B:order_priority', df_b, ss_b_u,"
-            " 'AxB', df_ab, ss_ab_u,"
-            " 'error', df_e, ss_e_u,"
-            " 'total', df_t, ss_t_u) AS (source, df, ss_u)"
-        ),
-        "df_e",
-        "ss_e_u",
-    )
-    # ss/ms stay EXACT integer-unit decimals rendered as strings — at
-    # fuzz magnitudes ss_u exceeds 2^53 and the decimal->double casts
-    # of the two engines disagree in the last ulp (caught by the fuzz
-    # gate); f is an exact half-up decimal ratio, always small.
-    two = F.lit(2).cast("decimal(38,0)")
-    ms_a = two * F.col("ss_u") + dec38(F.col("df")) * 1000
-    ms_b = two * dec38(F.col("df")) * 1000
-    f_num = F.col("ss_u") * F.col("df_e") * F.lit(10**6)
-    f_den = F.col("ss_e_u") * F.col("df")
-    f_a = two * f_num + f_den
-    f_b = two * f_den
-    return rows.select(
-        "source",
-        F.col("df").cast("long").alias("df"),
-        F.col("ss_u").cast("string").alias("ss_micro_units"),
-        ((ms_a - ms_a % ms_b) / ms_b)
-        .cast("decimal(38,0)")
-        .cast("string")
-        .alias("ms_milli_units"),
-        F.when(
-            F.col("source").isin("A:return_flag", "B:order_priority", "AxB"),
-            ((f_a - f_a % f_b) / f_b).cast("long") / F.lit(1e6),
-        ).alias("f_stat"),
-    ).orderBy("source")
 
 
 # ---------------------------------------------------------------------------
@@ -1764,8 +1383,7 @@ def agg_top_value_share(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     t = Tables(spark, sf_dir)
     c = t.orders.filter(F.col("o_totalprice").isNotNull()).select(
-        F.floor(F.col("o_totalprice") * F.lit(100.0) + F.lit(0.5))
-        .cast("long")
+        order_cents()
         .alias("cents")
     )
     dv = c.groupBy("cents").agg(F.count(F.lit(1)).alias("cnt"))

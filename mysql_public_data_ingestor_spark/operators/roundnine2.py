@@ -18,6 +18,14 @@ neighborhoods) — never raw fact rows.
 ``stats_mann_kendall_daily`` and
 ``events_peak_over_threshold_clusters`` live in
 ``operators/daily_*.py`` with the other daily-series queries.
+
+``stats_anderson_darling_quantity`` and
+``stats_jonckheere_terpstra_priority`` live in
+``operators/stats_rank.py``; ``stats_bartlett_variance_priority`` and
+``stats_partial_correlation_price`` live in
+``operators/stats_models.py``; ``stats_cronbach_alpha_gates`` lives in
+``operators/stats_tables.py``; ``stats_gumbel_daily_max_fit`` lives in
+``operators/stats_dist.py`` with the other stats queries.
 """
 
 from __future__ import annotations
@@ -437,624 +445,6 @@ def ml_precision_at_k_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("hits_at_k") * F.col("n"), F.col("k_eff") * F.col("n_pos")
             ),
         ).alias("lift_at_k"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# 7. Jonckheere-Terpstra ordered-alternative test: quantity by priority
-# ---------------------------------------------------------------------------
-
-
-def _jonckheere_oracle() -> str:
-    return """
-    WITH q AS (
-      SELECT o.o_orderpriority AS g, CAST(l.l_quantity AS BIGINT) AS v
-      FROM lineitem l JOIN orders o ON o.o_orderkey = l.l_orderkey
-      WHERE l.l_quantity IS NOT NULL
-    ), cells AS (
-      SELECT g, v, CAST(count(*) AS BIGINT) AS c FROM q GROUP BY g, v
-    ), jt AS (
-      SELECT CAST(coalesce(sum(CASE WHEN a.v < b.v THEN 2 * a.c * b.c
-                                    WHEN a.v = b.v THEN a.c * b.c
-                                    ELSE 0 END), 0) AS BIGINT) AS jt2
-      FROM cells a JOIN cells b ON a.g < b.g
-    ), grp AS (
-      SELECT CAST(sum(n_g) AS BIGINT) AS n,
-             CAST(sum(n_g::HUGEINT * n_g) AS HUGEINT) AS sn2,
-             CAST(sum(n_g::HUGEINT * (n_g-1) * (2*n_g+5)) AS HUGEINT) AS ga,
-             CAST(sum(n_g::HUGEINT * (n_g-1) * (n_g-2)) AS HUGEINT) AS gb,
-             CAST(sum(n_g::HUGEINT * (n_g-1)) AS HUGEINT) AS gd
-      FROM (SELECT g, CAST(sum(c) AS BIGINT) AS n_g FROM cells GROUP BY g)
-    ), tie AS (
-      SELECT CAST(coalesce(sum(t::HUGEINT * (t-1) * (2*t+5)), 0) AS HUGEINT) AS ta,
-             CAST(coalesce(sum(t::HUGEINT * (t-1) * (t-2)), 0) AS HUGEINT) AS tb,
-             CAST(coalesce(sum(t::HUGEINT * (t-1)), 0) AS HUGEINT) AS td
-      FROM (SELECT v, CAST(sum(c) AS BIGINT) AS t FROM cells GROUP BY v)
-    ), stat AS (
-      SELECT jt2, n,
-             n::HUGEINT * n - sn2 AS e4,
-             CAST(n::HUGEINT * (n-1) * (2*n+5) - ga - ta AS DOUBLE) / 72.0::DOUBLE
-             + (CAST(gb AS DOUBLE) * CAST(tb AS DOUBLE))
-               / (36.0::DOUBLE * CAST(n::HUGEINT * (n-1) * (n-2) AS DOUBLE))
-             + (CAST(gd AS DOUBLE) * CAST(td AS DOUBLE))
-               / (8.0::DOUBLE * CAST(n::HUGEINT * (n-1) AS DOUBLE)) AS var_jt
-      FROM jt, grp, tie
-    )
-    SELECT n AS n_total, jt2, CAST(e4 AS BIGINT) AS e_jt_x4,
-           CASE WHEN var_jt > 0 THEN
-             CAST(floor(CAST(2::HUGEINT * jt2 - e4 AS DOUBLE)
-                        / (4.0::DOUBLE * sqrt(var_jt))
-                        * 1000000.0 + 0.5) AS BIGINT) / 1000000.0
-           END AS z_jt
-    FROM stat
-    """
-
-
-@register("stats_jonckheere_terpstra_priority", oracle=_jonckheere_oracle())
-def stats_jonckheere_terpstra_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Jonckheere-Terpstra ordered-alternative test: does lineitem
-    quantity trend MONOTONICALLY across the ordered priority classes
-    (1-URGENT -> 5-LOW)? JT = sum over ordered group pairs of the
-    between-group Mann-Whitney counts — the test Kruskal-Wallis cannot
-    replace when the alternative is ordered (KW spends power on
-    arbitrary differences; JT concentrates it on the trend), finishing
-    the ordered-groups corner of the nonparametric family.
-
-    Everything runs on the (group, value) COUNT GRID — 5 priorities x
-    <= 50 distinct quantities — so the pairwise "joins" are 250-row
-    cell products, never row pairs: JT2 (doubled, tie-in-halves exact)
-    is one cell-grid join-aggregate, and the Lehmann tie-corrected
-    variance's three terms come from per-group and per-value count
-    aggregates. Count cubes exceed int64 at fuzz magnitudes, so they
-    accumulate in decimal/HUGEINT; the two >1e38 cross-products
-    (gb*tb, gd*td) multiply AFTER the correctly-rounded double cast,
-    in the same association order in both engines; z quantizes
-    half-up 1e-6.
-    """
-    t = Tables(spark, sf_dir)
-    q = (
-        t.lineitem.filter(F.col("l_quantity").isNotNull())
-        .join(t.orders, t.lineitem.l_orderkey == t.orders.o_orderkey)
-        .select(
-            F.col("o_orderpriority").alias("g"),
-            F.col("l_quantity").cast("long").alias("v"),
-        )
-    )
-    cells = q.groupBy("g", "v").agg(F.count(F.lit(1)).alias("c"))
-    a = cells.select(
-        F.col("g").alias("ga_"), F.col("v").alias("va_"), F.col("c").alias("ca_")
-    )
-    b = cells.select(
-        F.col("g").alias("gb_"), F.col("v").alias("vb_"), F.col("c").alias("cb_")
-    )
-    # the cell grid is bounded (|priorities| x |quantity domain| <= 250
-    # rows at any corpus size) — broadcast one side so the ordered-pair
-    # non-equi join plans as a BroadcastNestedLoopJoin over the tiny
-    # grid, never a CartesianProduct
-    jt = a.join(F.broadcast(b), F.col("ga_") < F.col("gb_")).agg(
-        F.coalesce(
-            F.sum(
-                F.when(F.col("va_") < F.col("vb_"), 2 * F.col("ca_") * F.col("cb_"))
-                .when(F.col("va_") == F.col("vb_"), F.col("ca_") * F.col("cb_"))
-                .otherwise(0)
-            ),
-            F.lit(0),
-        ).alias("jt2")
-    )
-    ng = cells.groupBy("g").agg(F.sum("c").alias("n_g"))
-    grp = ng.agg(
-        F.sum("n_g").alias("n"),
-        F.sum(dec38(F.col("n_g")) * F.col("n_g")).alias("sn2"),
-        F.sum(
-            dec38(F.col("n_g")) * (F.col("n_g") - 1) * (2 * F.col("n_g") + 5)
-        ).alias("ga"),
-        F.sum(dec38(F.col("n_g")) * (F.col("n_g") - 1) * (F.col("n_g") - 2)).alias(
-            "gb"
-        ),
-        F.sum(dec38(F.col("n_g")) * (F.col("n_g") - 1)).alias("gd"),
-    )
-    tv = cells.groupBy("v").agg(F.sum("c").alias("t"))
-    tie = tv.agg(
-        F.coalesce(
-            F.sum(dec38(F.col("t")) * (F.col("t") - 1) * (2 * F.col("t") + 5)),
-            F.lit(0).cast("decimal(38,0)"),
-        ).alias("ta"),
-        F.coalesce(
-            F.sum(dec38(F.col("t")) * (F.col("t") - 1) * (F.col("t") - 2)),
-            F.lit(0).cast("decimal(38,0)"),
-        ).alias("tb"),
-        F.coalesce(
-            F.sum(dec38(F.col("t")) * (F.col("t") - 1)),
-            F.lit(0).cast("decimal(38,0)"),
-        ).alias("td"),
-    )
-    st = jt.crossJoin(F.broadcast(grp)).crossJoin(F.broadcast(tie))
-    nd = dec38(F.col("n"))
-    e4 = nd * F.col("n") - F.col("sn2")
-    var_jt = (
-        (nd * (F.col("n") - 1) * (2 * F.col("n") + 5) - F.col("ga") - F.col("ta")).cast(
-            "double"
-        )
-        / F.lit(72.0)
-        + (F.col("gb").cast("double") * F.col("tb").cast("double"))
-        / (F.lit(36.0) * (nd * (F.col("n") - 1) * (F.col("n") - 2)).cast("double"))
-        + (F.col("gd").cast("double") * F.col("td").cast("double"))
-        / (F.lit(8.0) * (nd * (F.col("n") - 1)).cast("double"))
-    )
-    z = (F.lit(2).cast("decimal(38,0)") * F.col("jt2") - e4).cast("double") / (
-        F.lit(4.0) * F.sqrt(var_jt)
-    )
-    return st.select(
-        F.col("n").alias("n_total"),
-        "jt2",
-        e4.cast("long").alias("e_jt_x4"),
-        F.when(
-            var_jt > 0,
-            F.floor(z * F.lit(1000000.0) + F.lit(0.5)).cast("long") / F.lit(1e6),
-        ).alias("z_jt"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# 8. Bartlett's test for equal order-total variance across priorities
-# ---------------------------------------------------------------------------
-
-
-def _bartlett_oracle() -> str:
-    from ..functions.detmath import sql_det_ln_steps
-
-    return f"""
-    WITH px AS (
-      SELECT o_orderpriority AS g,
-             CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS x
-      FROM orders
-    ), per AS (
-      SELECT g, CAST(count(*) AS BIGINT) AS n_g,
-             CAST(sum(x) AS HUGEINT) AS s,
-             CAST(sum(x::HUGEINT * x) AS HUGEINT) AS qq
-      FROM px GROUP BY g
-    ), s2t AS (
-      SELECT g, n_g,
-             CAST((n_g::HUGEINT * qq - s * s) // (n_g::HUGEINT * (n_g - 1))
-               AS BIGINT) AS s2_g,
-             (n_g::HUGEINT * qq - s * s) // n_g::HUGEINT AS ss_g
-      FROM per WHERE n_g >= 2
-    ), {sql_det_ln_steps('s2t', 's2_g', 'lg')},
-    tot AS (
-      SELECT CAST(count(*) AS BIGINT) AS k,
-             CAST(sum(n_g) AS BIGINT) AS n,
-             CAST(sum(ss_g) AS HUGEINT) AS sssum,
-             CAST(sum((n_g - 1)::HUGEINT * lg) AS HUGEINT) AS slg,
-             CAST(sum(1000000000000000000::HUGEINT // (n_g - 1)) AS BIGINT)
-               AS invsum_u
-      FROM lg_rel
-    ), pool AS (
-      SELECT k, n, slg, invsum_u,
-             CAST(sssum // (n - k)::HUGEINT AS BIGINT) AS sp2
-      FROM tot
-    ), {sql_det_ln_steps('pool', 'sp2', 'lp')}
-    SELECT k AS k_groups, n AS n_total, sp2 AS pooled_var_cents2,
-           CASE WHEN k >= 2 AND n > k THEN
-             CAST(floor(
-               (CAST((n - k)::HUGEINT * lp - slg AS DOUBLE) / 1000000.0::DOUBLE)
-               / (1.0::DOUBLE + ((CAST(invsum_u AS DOUBLE)
-                   - CAST(1000000000000000000::HUGEINT // (n - k)::HUGEINT
-                          AS DOUBLE)) / 1e18::DOUBLE)
-                  / (3.0::DOUBLE * (k - 1)))
-               * 1000000.0 + 0.5) AS BIGINT) / 1000000.0
-           END AS t_bartlett
-    FROM lp_rel
-    """
-
-
-@register("stats_bartlett_variance_priority", oracle=_bartlett_oracle())
-def stats_bartlett_variance_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bartlett's test for homogeneity of order-total variance across
-    the five priority classes — the NORMAL-theory variance test beside
-    the robust ones (Levene tests deviations from group centers,
-    Mood/Ansari test scale by ranks; Bartlett is the likelihood-ratio
-    test every ANOVA textbook gates on, most powerful under normality
-    and the right "did the spread change" screen when the data are
-    well-behaved).
-
-    T = [(N-k) ln s_p^2 - sum (n_i-1) ln s_i^2] / C. Variances are
-    integer-truncated cents^2 (exact decimal (n*Q - S^2) // d in both
-    engines — the <1 cents^2 truncation is part of the statistic's
-    definition here, identically on both sides); the logs are the
-    det-ln fixed-point chain, so (N-k) ln s_p^2 - sum (n_i-1) ln s_i^2
-    is an EXACT int64 in 1e-6 ln-units (the ln-unit shift from cents^2
-    scaling cancels because the coefficients sum to zero); the C
-    correction's reciprocal sum accumulates as exact 1e-18-unit
-    integer divisions, so C is bit-identical cross-engine. One scan to
-    5 group rows; everything after is constant-size.
-    """
-    from ..functions.detmath import det_ln_q
-
-    t = Tables(spark, sf_dir)
-    px = t.orders.select(
-        F.col("o_orderpriority").alias("g"),
-        F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long").alias("x"),
-    )
-    per = px.groupBy("g").agg(
-        F.count(F.lit(1)).alias("n_g"),
-        F.sum(dec38(F.col("x"))).alias("s"),
-        F.sum(dec38(F.col("x")) * F.col("x")).alias("qq"),
-    ).filter(F.col("n_g") >= 2)
-
-    def tdiv(num, den):
-        return (num - num % den) / den
-
-    ssnum = dec38(F.col("n_g")) * F.col("qq") - F.col("s") * F.col("s")
-    s2t = per.select(
-        "g",
-        "n_g",
-        tdiv(ssnum, dec38(F.col("n_g")) * (F.col("n_g") - 1)).cast("long").alias("s2_g"),
-        tdiv(ssnum, dec38(F.col("n_g"))).alias("ss_g"),
-    )
-    lg = s2t.select("n_g", "ss_g", det_ln_q(F.col("s2_g")).alias("lg"))
-    big = F.lit(10**18).cast("decimal(38,0)")
-    tot = lg.agg(
-        F.count(F.lit(1)).alias("k"),
-        F.sum("n_g").alias("n"),
-        F.sum(F.col("ss_g")).alias("sssum"),
-        F.sum(dec38(F.col("n_g") - 1) * F.col("lg")).alias("slg"),
-        F.sum(tdiv(big, dec38(F.col("n_g") - 1)).cast("long")).alias("invsum_u"),
-    )
-    pool = tot.select(
-        "k",
-        "n",
-        "slg",
-        "invsum_u",
-        tdiv(F.col("sssum"), dec38(F.col("n") - F.col("k"))).cast("long").alias("sp2"),
-    )
-    lp = pool.select("*", det_ln_q(F.col("sp2")).alias("lp"))
-    t_num = (
-        (dec38(F.col("n") - F.col("k")) * F.col("lp") - F.col("slg")).cast("double")
-        / F.lit(1000000.0)
-    )
-    c_corr = F.lit(1.0) + (
-        (
-            F.col("invsum_u").cast("double")
-            - tdiv(big, dec38(F.col("n") - F.col("k"))).cast("double")
-        )
-        / F.lit(1e18)
-    ) / (F.lit(3.0) * (F.col("k") - 1))
-    return lp.select(
-        F.col("k").alias("k_groups"),
-        F.col("n").alias("n_total"),
-        F.col("sp2").alias("pooled_var_cents2"),
-        F.when(
-            (F.col("k") >= 2) & (F.col("n") > F.col("k")),
-            F.floor(t_num / c_corr * F.lit(1000000.0) + F.lit(0.5)).cast("long")
-            / F.lit(1e6),
-        ).alias("t_bartlett"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# 9. Partial correlation: price ~ quantity controlling for discount
-# ---------------------------------------------------------------------------
-
-
-def _partial_corr_oracle() -> str:
-    r = (
-        "(CAST(n AS DOUBLE) * CAST(s{a}{b} AS DOUBLE)"
-        " - CAST(s{a} AS DOUBLE) * CAST(s{b} AS DOUBLE))"
-        " / sqrt((CAST(n AS DOUBLE) * CAST(s{a}{a} AS DOUBLE)"
-        " - CAST(s{a} AS DOUBLE) * CAST(s{a} AS DOUBLE))"
-        " * (CAST(n AS DOUBLE) * CAST(s{b}{b} AS DOUBLE)"
-        " - CAST(s{b} AS DOUBLE) * CAST(s{b} AS DOUBLE)))"
-    )
-    rxy, rxz, ryz = r.format(a="x", b="y"), r.format(a="x", b="z"), r.format(a="y", b="z")
-    return f"""
-    WITH v AS (
-      SELECT CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT) AS x,
-             CAST(l_quantity AS BIGINT) AS y,
-             CAST(floor(l_discount * 100 + 0.5) AS BIGINT) AS z
-      FROM lineitem
-      WHERE l_extendedprice IS NOT NULL AND l_quantity IS NOT NULL
-        AND l_discount IS NOT NULL
-    ), a AS (
-      SELECT CAST(count(*) AS BIGINT) AS n,
-             CAST(sum(x) AS HUGEINT) AS sx, CAST(sum(y) AS HUGEINT) AS sy,
-             CAST(sum(z) AS HUGEINT) AS sz,
-             CAST(sum(x::HUGEINT * x) AS HUGEINT) AS sxx,
-             CAST(sum(y::HUGEINT * y) AS HUGEINT) AS syy,
-             CAST(sum(z::HUGEINT * z) AS HUGEINT) AS szz,
-             CAST(sum(x::HUGEINT * y) AS HUGEINT) AS sxy,
-             CAST(sum(x::HUGEINT * z) AS HUGEINT) AS sxz,
-             CAST(sum(y::HUGEINT * z) AS HUGEINT) AS syz
-      FROM v
-    ), rr AS (
-      SELECT n, {rxy} AS rxy, {rxz} AS rxz, {ryz} AS ryz FROM a
-    )
-    SELECT n AS n_rows,
-           CAST(floor(rxy * 1000000.0 + 0.5) AS BIGINT) / 1000000.0 AS r_xy,
-           CAST(floor(rxz * 1000000.0 + 0.5) AS BIGINT) / 1000000.0 AS r_xz,
-           CAST(floor(ryz * 1000000.0 + 0.5) AS BIGINT) / 1000000.0 AS r_yz,
-           CASE WHEN (1.0::DOUBLE - rxz * rxz) * (1.0::DOUBLE - ryz * ryz) > 0 THEN
-             CAST(floor((rxy - rxz * ryz)
-                        / sqrt((1.0::DOUBLE - rxz * rxz)
-                               * (1.0::DOUBLE - ryz * ryz))
-                        * 1000000.0 + 0.5) AS BIGINT) / 1000000.0
-           END AS r_xy_given_z
-    FROM rr
-    """
-
-
-@register("stats_partial_correlation_price", oracle=_partial_corr_oracle())
-def stats_partial_correlation_price(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Partial correlation of extended price and quantity CONTROLLING
-    for discount: r_xy.z = (r_xy - r_xz r_yz)/sqrt((1-r_xz^2)(1-r_yz^2))
-    — the "is the price-quantity relationship real or
-    discount-mediated" question the marginal correlations
-    (``stats_spearman_corr``, ``stats_kendall_tau_b``) cannot answer;
-    the three-variable conditioning member of the correlation family.
-
-    One scan accumulates all ten exact decimal moment sums (cents /
-    integer units, squares widened BEFORE multiplication); the three
-    Pearson r's and the partial r are evaluated in double from those
-    exact integers with an identical association order in both
-    engines, each quantized half-up 1e-6. Degenerate conditioning
-    (|r_xz| or |r_yz| = 1) yields NULL on both sides.
-    """
-    t = Tables(spark, sf_dir)
-    v = t.lineitem.filter(
-        F.col("l_extendedprice").isNotNull()
-        & F.col("l_quantity").isNotNull()
-        & F.col("l_discount").isNotNull()
-    ).select(
-        F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5)).cast("long").alias("x"),
-        F.col("l_quantity").cast("long").alias("y"),
-        F.floor(F.col("l_discount") * 100 + F.lit(0.5)).cast("long").alias("z"),
-    )
-    a = v.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(dec38(F.col("x"))).alias("sx"),
-        F.sum(dec38(F.col("y"))).alias("sy"),
-        F.sum(dec38(F.col("z"))).alias("sz"),
-        F.sum(dec38(F.col("x")) * F.col("x")).alias("sxx"),
-        F.sum(dec38(F.col("y")) * F.col("y")).alias("syy"),
-        F.sum(dec38(F.col("z")) * F.col("z")).alias("szz"),
-        F.sum(dec38(F.col("x")) * F.col("y")).alias("sxy"),
-        F.sum(dec38(F.col("x")) * F.col("z")).alias("sxz"),
-        F.sum(dec38(F.col("y")) * F.col("z")).alias("syz"),
-    )
-
-    def r(sa, sb, sab, saa, sbb):
-        nd = F.col("n").cast("double")
-        num = nd * F.col(sab).cast("double") - F.col(sa).cast("double") * F.col(
-            sb
-        ).cast("double")
-        den = F.sqrt(
-            (nd * F.col(saa).cast("double") - F.col(sa).cast("double") * F.col(sa).cast("double"))
-            * (nd * F.col(sbb).cast("double") - F.col(sb).cast("double") * F.col(sb).cast("double"))
-        )
-        return num / den
-
-    rxy = r("sx", "sy", "sxy", "sxx", "syy")
-    rxz = r("sx", "sz", "sxz", "sxx", "szz")
-    ryz = r("sy", "sz", "syz", "syy", "szz")
-
-    def q6(c):
-        return F.floor(c * F.lit(1000000.0) + F.lit(0.5)).cast("long") / F.lit(1e6)
-
-    pden = (F.lit(1.0) - rxz * rxz) * (F.lit(1.0) - ryz * ryz)
-    return a.select(
-        F.col("n").alias("n_rows"),
-        q6(rxy).alias("r_xy"),
-        q6(rxz).alias("r_xz"),
-        q6(ryz).alias("r_yz"),
-        F.when(pden > 0, q6((rxy - rxz * ryz) / F.sqrt(pden))).alias("r_xy_given_z"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# 10. Cronbach's alpha over the three document-quality gates
-# ---------------------------------------------------------------------------
-
-
-def _cronbach_oracle() -> str:
-    from .roundeight import MCNEMAR_MIN_CHARS, MCNEMAR_MIN_TOKENS, COCHRAN_MIN_SENTENCES
-    from .corpus import _SQL_TOKENS
-    from ..functions.exact import sql_round_big_int_ratio
-
-    return f"""
-    WITH flags AS (
-      SELECT CASE WHEN n_chars >= {MCNEMAR_MIN_CHARS} THEN 1 ELSE 0 END AS a,
-             CASE WHEN len({_SQL_TOKENS}) >= {MCNEMAR_MIN_TOKENS} THEN 1 ELSE 0 END AS b,
-             CASE WHEN len(string_split(text, '.')) - 1 >= {COCHRAN_MIN_SENTENCES}
-                  THEN 1 ELSE 0 END AS c
-      FROM documents
-    ), agg AS (
-      SELECT CAST(count(*) AS BIGINT) AS n,
-             CAST(sum(a) AS BIGINT) AS g_a,
-             CAST(sum(b) AS BIGINT) AS g_b,
-             CAST(sum(c) AS BIGINT) AS g_c,
-             CAST(sum(a + b + c) AS BIGINT) AS sl,
-             CAST(sum((a + b + c) * (a + b + c)) AS BIGINT) AS sll
-      FROM flags
-    ), vv AS (
-      SELECT n, g_a, g_b, g_c,
-             n::HUGEINT * sll - sl::HUGEINT * sl AS vt,
-             (n::HUGEINT * g_a - g_a::HUGEINT * g_a)
-             + (n::HUGEINT * g_b - g_b::HUGEINT * g_b)
-             + (n::HUGEINT * g_c - g_c::HUGEINT * g_c) AS vi
-      FROM agg
-    )
-    SELECT n AS n_docs, g_a, g_b, g_c,
-           CASE WHEN vt > 0 THEN
-             {sql_round_big_int_ratio('3::HUGEINT * (vt - vi)', '2::HUGEINT * vt')}
-           END AS cronbach_alpha
-    FROM vv
-    """
-
-
-@register("stats_cronbach_alpha_gates", oracle=_cronbach_oracle())
-def stats_cronbach_alpha_gates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cronbach's alpha internal-consistency coefficient over the same
-    three binary quality gates Cochran's Q tests
-    (``stats_cochran_q_gates``: char-length, token-count,
-    sentence-count): alpha = k/(k-1) * (1 - sum item variances /
-    variance of the summed score) — Cochran asks whether the gates
-    DISAGREE in pass rate; alpha asks whether they measure ONE
-    underlying "quality" trait (the scale-reliability read a corpus
-    team wants before collapsing gates into a single score).
-
-    With binary items the population variances reduce to
-    n*G_i - G_i^2 and n*sum(L^2) - (sum L)^2 — so alpha is ONE exact
-    big-integer ratio off the same single-scan aggregate Cochran uses
-    (k=3 hard-coded: 3(vt - vi) / 2 vt); no float enters at any
-    point. NULL when the summed score is constant (zero variance).
-    One scan to one row.
-    """
-    from .roundeight import (
-        MCNEMAR_MIN_CHARS,
-        MCNEMAR_MIN_TOKENS,
-        COCHRAN_MIN_SENTENCES,
-    )
-    from ..functions.exact import round_big_int_ratio
-    from ..functions.textnorm import whitespace_tokens
-
-    t = Tables(spark, sf_dir)
-    a = F.when(F.col("n_chars") >= MCNEMAR_MIN_CHARS, 1).otherwise(0)
-    b = F.when(
-        F.size(whitespace_tokens(F.col("text"))) >= MCNEMAR_MIN_TOKENS, 1
-    ).otherwise(0)
-    c = F.when(
-        F.size(F.split(F.col("text"), "\\.", -1)) - 1 >= COCHRAN_MIN_SENTENCES, 1
-    ).otherwise(0)
-    li = a + b + c
-    agg = t.documents.select(
-        a.alias("a"), b.alias("b"), c.alias("c"), li.alias("l")
-    ).agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("a").cast("long").alias("g_a"),
-        F.sum("b").cast("long").alias("g_b"),
-        F.sum("c").cast("long").alias("g_c"),
-        F.sum("l").cast("long").alias("sl"),
-        F.sum(F.col("l") * F.col("l")).cast("long").alias("sll"),
-    )
-    nd = dec38(F.col("n"))
-    vt = nd * F.col("sll") - dec38(F.col("sl")) * F.col("sl")
-    vi = (
-        (nd * F.col("g_a") - dec38(F.col("g_a")) * F.col("g_a"))
-        + (nd * F.col("g_b") - dec38(F.col("g_b")) * F.col("g_b"))
-        + (nd * F.col("g_c") - dec38(F.col("g_c")) * F.col("g_c"))
-    )
-    return agg.select(
-        F.col("n").alias("n_docs"),
-        "g_a",
-        "g_b",
-        "g_c",
-        F.when(
-            vt > 0,
-            round_big_int_ratio(
-                F.lit(3).cast("decimal(38,0)") * (vt - vi),
-                F.lit(2).cast("decimal(38,0)") * vt,
-            ),
-        ).alias("cronbach_alpha"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# 11. Gumbel fit of the daily maximum event value (method of moments)
-# ---------------------------------------------------------------------------
-
-GUMBEL_PI = 3.141592653589793
-GUMBEL_GAMMA = 0.5772156649015329
-
-
-def _gumbel_oracle() -> str:
-    from ..functions.exact import sql_round_big_int_ratio
-
-    return f"""
-    WITH daily AS (
-      SELECT CAST(ts AS DATE) AS day,
-             CAST(max(CAST(floor(value * 1000000 + 0.5) AS BIGINT)) AS BIGINT) AS m
-      FROM events WHERE value IS NOT NULL GROUP BY 1
-    ), a AS (
-      SELECT CAST(count(*) AS BIGINT) AS n,
-             CAST(sum(m) AS HUGEINT) AS s,
-             CAST(sum(m::HUGEINT * m) AS HUGEINT) AS q
-      FROM daily
-    ), fit AS (
-      SELECT n, s,
-             sqrt(6.0::DOUBLE * (CAST(n AS DOUBLE) * CAST(q AS DOUBLE)
-                  - CAST(s AS DOUBLE) * CAST(s AS DOUBLE))
-                  / (CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0::DOUBLE)))
-             / {GUMBEL_PI!r}::DOUBLE AS beta_micro
-      FROM a WHERE n >= 2
-    )
-    SELECT n AS n_days,
-           {sql_round_big_int_ratio('s', 'n::HUGEINT * 1000000')} AS mean_max,
-           CAST(floor(beta_micro / 1000000.0::DOUBLE * 1000000.0 + 0.5) AS BIGINT)
-             / 1000000.0 AS gumbel_beta,
-           CAST(floor((CAST(s AS DOUBLE) / CAST(n AS DOUBLE)
-                       - {GUMBEL_GAMMA!r}::DOUBLE * beta_micro) / 1000000.0::DOUBLE
-                      * 1000000.0 + 0.5) AS BIGINT) / 1000000.0 AS gumbel_mu
-    FROM fit
-    """
-
-
-@register("stats_gumbel_daily_max_fit", oracle=_gumbel_oracle())
-def stats_gumbel_daily_max_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gumbel (type-I extreme value) fit of the DAILY MAXIMUM event
-    value by the method of moments: beta = sqrt(6 Var)/pi,
-    mu = mean - gamma*beta — the block-maxima member of the
-    distribution-fitting family (Weibull fits the latency BODY,
-    negative-binomial the counts; extreme-value theory says block
-    maxima converge to Gumbel, and the fitted (mu, beta) is what a
-    capacity planner feeds return-level estimates: the p-quantile of
-    tomorrow's peak).
-
-    The block-maxima reduction (one groupBy day -> max) is the scan;
-    moments accumulate as exact decimal micro-unit sums over the
-    ~2.4k-day series. The sqrt and the pi/gamma double literals
-    (identical spellings both engines) enter only in the final
-    constant-size projection, quantized half-up 1e-6. Sample variance
-    uses the n-1 denominator in both engines.
-    """
-    t = Tables(spark, sf_dir)
-    daily = (
-        t.events.filter(F.col("value").isNotNull())
-        .select(
-            F.to_date("ts").alias("day"),
-            F.floor(F.col("value") * 1000000 + F.lit(0.5)).cast("long").alias("mu_v"),
-        )
-        .groupBy("day")
-        .agg(F.max("mu_v").alias("m"))
-    )
-    a = daily.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(dec38(F.col("m"))).alias("s"),
-        F.sum(dec38(F.col("m")) * F.col("m")).alias("q"),
-    ).filter(F.col("n") >= 2)
-    from ..functions.exact import round_big_int_ratio
-
-    nd = F.col("n").cast("double")
-    beta_micro = (
-        F.sqrt(
-            F.lit(6.0)
-            * (nd * F.col("q").cast("double") - F.col("s").cast("double") * F.col("s").cast("double"))
-            / (nd * (nd - F.lit(1.0)))
-        )
-        / F.lit(GUMBEL_PI)
-    )
-
-    def q6(c):
-        return F.floor(c * F.lit(1000000.0) + F.lit(0.5)).cast("long") / F.lit(1e6)
-
-    return a.select(
-        F.col("n").alias("n_days"),
-        round_big_int_ratio(
-            F.col("s"), dec38(F.col("n")) * F.lit(1000000)
-        ).alias("mean_max"),
-        q6(beta_micro / F.lit(1000000.0)).alias("gumbel_beta"),
-        q6(
-            (F.col("s").cast("double") / nd - F.lit(GUMBEL_GAMMA) * beta_micro)
-            / F.lit(1000000.0)
-        ).alias("gumbel_mu"),
     )
 
 
@@ -1532,107 +922,6 @@ def ml_uplift_by_engagement_tier(spark: SparkSession, sf_dir: str) -> DataFrame:
                 dec38(F.col("n_t")) * F.col("n_c"),
             ),
         ).alias("uplift"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# 17. Anderson-Darling two-sample statistic: quantity, returned vs rest
-# ---------------------------------------------------------------------------
-
-
-def _ad_oracle() -> str:
-    return """
-    WITH c AS (
-      SELECT l_returnflag AS g, CAST(l_quantity AS BIGINT) AS v
-      FROM lineitem WHERE l_returnflag IN ('R', 'N') AND l_quantity IS NOT NULL
-    ), dv AS (
-      SELECT v,
-             CAST(sum(CASE WHEN g = 'R' THEN 1 ELSE 0 END) AS BIGINT) AS cx,
-             CAST(sum(CASE WHEN g = 'N' THEN 1 ELSE 0 END) AS BIGINT) AS cy
-      FROM c GROUP BY v
-    ), cum AS (
-      SELECT v, cx, cy, cx + cy AS ct,
-             sum(cx) OVER (ORDER BY v) AS cumx,
-             sum(cy) OVER (ORDER BY v) AS cumy,
-             sum(cx + cy) OVER (ORDER BY v) AS cumt,
-             sum(cx) OVER () AS n, sum(cy) OVER () AS m
-      FROM dv
-    ), terms AS (
-      SELECT n, m, n + m AS nn,
-             CASE WHEN cumt < n + m THEN
-               CAST((2000000000::HUGEINT
-                     * ((m::HUGEINT * cumx - n::HUGEINT * cumy)
-                        * (m::HUGEINT * cumx - n::HUGEINT * cumy)) * ct
-                     + (n::HUGEINT * m * cumt * (n + m - cumt)))
-                    // (2::HUGEINT * n * m * cumt * (n + m - cumt)) AS BIGINT)
-             ELSE 0 END AS term_nano
-      FROM cum
-    )
-    SELECT CAST(max(n) AS BIGINT) AS n_returned,
-           CAST(max(m) AS BIGINT) AS n_other,
-           CAST(sum(term_nano) AS BIGINT) AS ad2_nano,
-           CAST(sum(term_nano) AS BIGINT) / 1000000000.0 AS ad2
-    FROM terms
-    """
-
-
-@register("stats_anderson_darling_quantity", oracle=_ad_oracle())
-def stats_anderson_darling_quantity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Anderson-Darling-type two-sample statistic for lineitem
-    quantity, returned vs non-returned (discrete-data form): A2 =
-    sum_v (m*cumx - n*cumy)^2 * c_v / (n*m*cumt*(N-cumt)) over the
-    pooled value domain (H < 1) — the TAIL-WEIGHTED member that
-    completes the two-sample ECDF family (KS takes the supremum, CvM
-    the unweighted quadratic mean; AD's 1/(H(1-H)) weight is why it
-    dominates both when differences live in the tails).
-
-    Cross-multiplied exact arithmetic throughout: each value's term
-    is ONE exact decimal division quantized half-up 1e-9 BEFORE the
-    cross-value summation (so no float aggregation order exists), and
-    the cumulative counts come from a window over the <= 50-value
-    quantity domain — the same bounded-domain ordered pass CvM and
-    Wilcoxon use, never a row-scaled sort.
-    """
-    t = Tables(spark, sf_dir)
-    c = t.lineitem.filter(
-        F.col("l_returnflag").isin("R", "N") & F.col("l_quantity").isNotNull()
-    ).select(
-        F.col("l_returnflag").alias("g"), F.col("l_quantity").cast("long").alias("v")
-    )
-    dv = c.groupBy("v").agg(
-        F.sum(F.when(F.col("g") == "R", 1).otherwise(0)).alias("cx"),
-        F.sum(F.when(F.col("g") == "N", 1).otherwise(0)).alias("cy"),
-    )
-    w_ord = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, 0)
-    w_all = Window.rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    cum = dv.select(
-        (F.col("cx") + F.col("cy")).alias("ct"),
-        F.sum("cx").over(w_ord).alias("cumx"),
-        F.sum("cy").over(w_ord).alias("cumy"),
-        F.sum(F.col("cx") + F.col("cy")).over(w_ord).alias("cumt"),
-        F.sum("cx").over(w_all).alias("n"),
-        F.sum("cy").over(w_all).alias("m"),
-    )
-    diff = dec38(F.col("m")) * F.col("cumx") - dec38(F.col("n")) * F.col("cumy")
-    den = (
-        dec38(F.col("n"))
-        * F.col("m")
-        * F.col("cumt")
-        * (F.col("n") + F.col("m") - F.col("cumt"))
-    )
-    num = F.lit(2000000000).cast("decimal(38,0)") * diff * diff * F.col("ct") + den
-    term = F.when(
-        F.col("cumt") < F.col("n") + F.col("m"),
-        ((num - num % (F.lit(2).cast("decimal(38,0)") * den))
-         / (F.lit(2).cast("decimal(38,0)") * den)).cast("long"),
-    ).otherwise(F.lit(0))
-    return cum.select("n", "m", term.alias("term_nano")).agg(
-        F.max("n").alias("n_returned"),
-        F.max("m").alias("n_other"),
-        F.sum("term_nano").alias("ad2_nano"),
-        (F.sum("term_nano") / F.lit(1000000000.0)).alias("ad2"),
     )
 
 

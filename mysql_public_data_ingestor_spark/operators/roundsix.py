@@ -8,6 +8,12 @@ their log-based statistics hash-exact across engines for the first
 time (naive Bayes, Zipf fit, deterministic Laplace noise).
 
 Every operator is registered directly (@register).
+
+``stats_kendall_tau_b``, ``stats_ks_two_sample``,
+``stats_spearman_corr`` and ``stats_theil_sen_trend`` live in
+``operators/stats_rank.py``; ``stats_wilson_ci_by_nation`` lives in
+``operators/stats_tables.py``; ``stats_changepoint_binseg`` lives in
+``operators/stats_models.py`` with the other stats queries.
 """
 
 from __future__ import annotations
@@ -16,208 +22,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions.exact import dec38
+from ..functions.exact import dec38, order_cents
 from ..registry import register
 from ..tables import Tables
 
 _P = 2_147_483_647  # Mersenne prime for the portable uniform hash
-
-
-# ---------------------------------------------------------------------------
-# 1. Kolmogorov-Smirnov two-sample test (A/B on full distributions)
-# ---------------------------------------------------------------------------
-
-
-def _ks_oracle() -> str:
-    return """
-    WITH q AS (
-      SELECT event_type, user_id % 2 AS cohort,
-             CAST(floor(value * 1000000.0 + 0.5) AS BIGINT) AS v_u
-      FROM events
-    ), g AS (
-      SELECT event_type, v_u,
-             CAST(sum(CASE WHEN cohort = 0 THEN 1 ELSE 0 END) AS BIGINT) AS ca,
-             CAST(sum(CASE WHEN cohort = 1 THEN 1 ELSE 0 END) AS BIGINT) AS cb
-      FROM q GROUP BY event_type, v_u
-    ), c AS (
-      SELECT event_type, v_u,
-             sum(ca) OVER (PARTITION BY event_type ORDER BY v_u) AS cum_a,
-             sum(cb) OVER (PARTITION BY event_type ORDER BY v_u) AS cum_b
-      FROM g
-    ), tot AS (
-      SELECT event_type,
-             CAST(max(cum_a) AS BIGINT) AS n_a,
-             CAST(max(cum_b) AS BIGINT) AS n_b
-      FROM c GROUP BY event_type
-    ), d AS (
-      SELECT c.event_type, t.n_a, t.n_b,
-             max(abs(CAST(cum_a AS HUGEINT) * t.n_b
-                     - CAST(cum_b AS HUGEINT) * t.n_a)) AS d_num
-      FROM c JOIN tot t USING (event_type)
-      GROUP BY c.event_type, t.n_a, t.n_b
-    )
-    SELECT event_type, n_a, n_b,
-           CAST(((2000000::HUGEINT * d_num + (n_a::HUGEINT * n_b))
-                 // (2::HUGEINT * n_a * n_b)) AS BIGINT) / 1000000.0 AS ks_stat
-    FROM d
-    """
-
-
-@register("stats_ks_two_sample", oracle=_ks_oracle())
-def stats_ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact two-sample Kolmogorov-Smirnov statistic per event type
-    between the even/odd user cohorts — the distribution-level A/B
-    test (t-test compares means; KS catches shape drift anywhere in
-    the CDF).
-
-    Exactness: values quantize to micro-units; the statistic is
-    max |F_a - F_b| evaluated only at the DISTINCT quantized values,
-    with the CDF difference cross-multiplied to the integer
-    |cum_a * n_b - cum_b * n_a| — no division until one final
-    decimal-domain half-up ratio by n_a * n_b (cents-scale-proof per
-    the round_big_int_ratio discipline).
-
-    Scale: one partial-aggregated groupBy on (event_type, value), one
-    bounded per-type ordered window over the distinct-value domain,
-    and a |event_types|-row reduce. No row-level sort of the raw
-    corpus — the window runs on the collapsed value histogram.
-    """
-    from ..functions.exact import quantize, round_big_int_ratio
-
-    t = Tables(spark, sf_dir)
-    q = t.events.select(
-        "event_type",
-        (F.col("user_id") % 2).alias("cohort"),
-        quantize(F.col("value"), 6).alias("v_u"),
-    )
-    g = q.groupBy("event_type", "v_u").agg(
-        F.sum(F.when(F.col("cohort") == 0, 1).otherwise(0)).alias("ca"),
-        F.sum(F.when(F.col("cohort") == 1, 1).otherwise(0)).alias("cb"),
-    )
-    w = Window.partitionBy("event_type").orderBy("v_u")
-    c = g.select(
-        "event_type",
-        F.sum("ca").over(w).alias("cum_a"),
-        F.sum("cb").over(w).alias("cum_b"),
-    )
-    tot = c.groupBy("event_type").agg(
-        F.max("cum_a").alias("n_a"), F.max("cum_b").alias("n_b")
-    )
-    d = (
-        c.join(tot, "event_type")
-        .groupBy("event_type", "n_a", "n_b")
-        .agg(
-            F.max(
-                F.abs(
-                    dec38(F.col("cum_a")) * dec38(F.col("n_b"))
-                    - dec38(F.col("cum_b")) * dec38(F.col("n_a"))
-                )
-            ).alias("d_num")
-        )
-    )
-    return d.select(
-        "event_type",
-        "n_a",
-        "n_b",
-        round_big_int_ratio(
-            F.col("d_num"), dec38(F.col("n_a")) * dec38(F.col("n_b"))
-        ).alias("ks_stat"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# 2. Wilson score interval for proportions (companion to the z-test)
-# ---------------------------------------------------------------------------
-
-WILSON_Z = 1.96  # 95% two-sided
-
-
-def _wilson_oracle() -> str:
-    z2 = f"({WILSON_Z!r}::DOUBLE * {WILSON_Z!r}::DOUBLE)"
-    return f"""
-    WITH base AS (
-      SELECT c.c_nationkey,
-             CAST(count(*) AS BIGINT) AS n,
-             CAST(sum(CASE WHEN o.o_orderpriority = '1-URGENT' THEN 1 ELSE 0 END)
-                  AS BIGINT) AS k
-      FROM orders o JOIN customer c ON c.c_custkey = o.o_custkey
-      GROUP BY 1
-    ), w AS (
-      SELECT c_nationkey, n, k,
-             CAST(k AS DOUBLE) / CAST(n AS DOUBLE) AS p,
-             {z2} / CAST(n AS DOUBLE) AS zn
-      FROM base
-    ), parts AS (
-      SELECT c_nationkey, n, k,
-             (p + zn * 0.5) / (1.0 + zn) AS center,
-             ({WILSON_Z!r}::DOUBLE * sqrt(p * (1.0 - p) / CAST(n AS DOUBLE)
-                                          + zn * 0.25 / CAST(n AS DOUBLE)))
-               / (1.0 + zn) AS halfwidth
-      FROM w
-    )
-    SELECT nn.n_name AS nation, n AS n_orders, k AS n_urgent,
-           CAST(floor(center * 1000000.0 + 0.5) AS BIGINT) / 1000000.0
-             AS wilson_center,
-           CAST(floor((center - halfwidth) * 1000000.0 + 0.5) AS BIGINT)
-             / 1000000.0 AS ci_lo,
-           CAST(floor((center + halfwidth) * 1000000.0 + 0.5) AS BIGINT)
-             / 1000000.0 AS ci_hi
-    FROM parts JOIN nation nn ON nn.n_nationkey = parts.c_nationkey
-    """
-
-
-@register("stats_wilson_ci_by_nation", oracle=_wilson_oracle())
-def stats_wilson_ci_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Wilson score 95% confidence interval for the urgent-order rate
-    per nation — the proportion CI that stays inside [0,1] and behaves
-    at small n, complementing ``stats_proportions_ztest`` (which tests
-    a difference; this bounds a level).
-
-    Cross-engine exactness without integer gymnastics: the Wilson
-    formula is +-*/sqrt only — every one of those is IEEE
-    correctly-rounded on both engines — so mirroring the association
-    order (and ::DOUBLE-casting the z constant, which DuckDB would
-    otherwise parse as DECIMAL) makes the doubles bit-identical before
-    the one micro-unit quantization. Scale: one partial-aggregated
-    fact groupBy; everything downstream is |nations| rows.
-    """
-    t = Tables(spark, sf_dir)
-    base = (
-        t.orders.join(
-            t.customer.select("c_custkey", "c_nationkey"),
-            t.orders.o_custkey == F.col("c_custkey"),
-        )
-        .groupBy("c_nationkey")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(
-                F.when(F.col("o_orderpriority") == "1-URGENT", 1).otherwise(0)
-            ).alias("k"),
-        )
-    )
-    nd = F.col("n").cast("double")
-    p = F.col("k").cast("double") / nd
-    zn = F.lit(WILSON_Z * WILSON_Z) / nd
-    center = (p + zn * F.lit(0.5)) / (F.lit(1.0) + zn)
-    halfwidth = (
-        F.lit(WILSON_Z)
-        * F.sqrt(p * (F.lit(1.0) - p) / nd + zn * F.lit(0.25) / nd)
-    ) / (F.lit(1.0) + zn)
-    q6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)).cast("long") / F.lit(1e6)  # noqa: E731
-    return (
-        base.join(
-            F.broadcast(t.nation.select("n_nationkey", "n_name")),
-            base.c_nationkey == F.col("n_nationkey"),
-        )
-        .select(
-            F.col("n_name").alias("nation"),
-            F.col("n").alias("n_orders"),
-            F.col("k").alias("n_urgent"),
-            q6(center).alias("wilson_center"),
-            q6(center - halfwidth).alias("ci_lo"),
-            q6(center + halfwidth).alias("ci_hi"),
-        )
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -433,243 +242,6 @@ def events_acf_daily_lags(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n").alias("n_days"),
             round_big_int_ratio(F.col("num"), F.col("den")).alias("acf"),
         )
-    )
-
-
-# ---------------------------------------------------------------------------
-# 6. Theil-Sen robust trend (median of pairwise slopes)
-# ---------------------------------------------------------------------------
-
-
-def _theil_sen_oracle() -> str:
-    return """
-    WITH daily AS (
-      SELECT event_type, CAST(ts AS DATE) AS d,
-             CAST(sum(CAST(floor(value * 100.0 + 0.5) AS BIGINT)) AS BIGINT)
-               AS cents
-      FROM events GROUP BY 1, 2
-    ), idx AS (
-      SELECT event_type, cents,
-             row_number() OVER (PARTITION BY event_type ORDER BY d) AS i
-      FROM daily
-    ), pairs AS (
-      SELECT a.event_type,
-             CAST(CASE WHEN b.cents >= a.cents
-               THEN  ((20000::HUGEINT * (b.cents - a.cents) + (b.i - a.i))
-                      // (2::HUGEINT * (b.i - a.i)))
-               ELSE -((20000::HUGEINT * (a.cents - b.cents) + (b.i - a.i))
-                      // (2::HUGEINT * (b.i - a.i)))
-             END AS BIGINT) AS slope_q4
-      FROM idx a JOIN idx b
-        ON a.event_type = b.event_type AND b.i > a.i
-    )
-    SELECT event_type,
-           CAST((SELECT count(*) FROM idx x WHERE x.event_type = p.event_type)
-                AS BIGINT) AS n_days,
-           CAST(count(*) AS BIGINT) AS n_pairs,
-           CAST(quantile_disc(slope_q4, 0.5) AS BIGINT) / 10000.0
-             AS trend_cents_per_day
-    FROM pairs p GROUP BY event_type
-    """
-
-
-@register("stats_theil_sen_trend", oracle=_theil_sen_oracle())
-def stats_theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Theil-Sen robust trend of daily revenue per event type: the
-    MEDIAN of all pairwise day-to-day slopes — the outlier-immune
-    alternative to OLS regression (one corrupted day moves OLS
-    arbitrarily; it moves the pairwise-slope median by one rank).
-
-    Exactness: slopes are exact half-up integer ratios of cents over
-    day-index differences at 4 dp (decimal-domain, cents-scale-proof),
-    and the median is the exact discrete quantile over those int64s.
-    Scale: the corpus collapses to a |event_types| x |days| series
-    first; the O(days^2) pair join runs on that BOUNDED series (days
-    grow with calendar time, not data volume) — never on raw rows.
-    """
-    t = Tables(spark, sf_dir)
-    daily = (
-        t.events.select(
-            "event_type",
-            F.to_date("ts").alias("d"),
-            F.floor(F.col("value") * F.lit(100.0) + F.lit(0.5))
-            .cast("long")
-            .alias("c_row"),
-        )
-        .groupBy("event_type", "d")
-        .agg(F.sum("c_row").alias("cents"))
-    )
-    idx = daily.select(
-        "event_type",
-        "cents",
-        F.row_number()
-        .over(Window.partitionBy("event_type").orderBy("d"))
-        .alias("i"),
-    )
-    b = idx.select(
-        F.col("event_type").alias("et_b"),
-        F.col("cents").alias("cents_b"),
-        F.col("i").alias("i_b"),
-    )
-    num = dec38(F.col("cents_b")) - dec38(F.col("cents"))
-    den = dec38(F.col("i_b")) - dec38(F.col("i"))
-    a_ = F.lit(20000).cast("decimal(38,0)") * F.abs(num) + den
-    b_ = F.lit(2).cast("decimal(38,0)") * den
-    mag = ((a_ - a_ % b_) / b_).cast("long")
-    slope_q4 = F.when(num < 0, -mag).otherwise(mag)
-    pairs = (
-        idx.join(
-            b,
-            (F.col("et_b") == F.col("event_type")) & (F.col("i_b") > F.col("i")),
-        )
-        .select("event_type", slope_q4.alias("slope_q4"))
-    )
-    n_days = idx.groupBy("event_type").agg(F.count(F.lit(1)).alias("n_days"))
-    exact = str(2**31 - 1)
-    return (
-        pairs.groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_pairs"),
-            F.expr(f"percentile_approx(slope_q4, 0.5, {exact})")
-            .cast("long")
-            .alias("med_q4"),
-        )
-        .join(F.broadcast(n_days), "event_type")
-        .select(
-            "event_type",
-            "n_days",
-            "n_pairs",
-            (F.col("med_q4") / F.lit(1e4)).alias("trend_cents_per_day"),
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
-# 7. Spearman rank correlation (midranks, tie-exact)
-# ---------------------------------------------------------------------------
-
-
-def _spearman_oracle() -> str:
-    return """
-    WITH q AS (
-      SELECT event_type,
-             CAST(floor(value * 1000.0 + 0.5) AS BIGINT) AS v_m,
-             CAST(hour(ts) AS BIGINT) AS h
-      FROM events
-    ), vx AS (
-      SELECT event_type, v_m, CAST(count(*) AS BIGINT) AS cnt,
-             coalesce(sum(count(*)) OVER (PARTITION BY event_type ORDER BY v_m
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cum
-      FROM q GROUP BY event_type, v_m
-    ), vy AS (
-      SELECT event_type, h, CAST(count(*) AS BIGINT) AS cnt,
-             coalesce(sum(count(*)) OVER (PARTITION BY event_type ORDER BY h
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cum
-      FROM q GROUP BY event_type, h
-    ), r AS (
-      SELECT q.event_type,
-             CAST(2 * vx.cum + vx.cnt + 1 AS HUGEINT) AS rx2,
-             CAST(2 * vy.cum + vy.cnt + 1 AS HUGEINT) AS ry2
-      FROM q
-      JOIN vx ON vx.event_type = q.event_type AND vx.v_m = q.v_m
-      JOIN vy ON vy.event_type = q.event_type AND vy.h = q.h
-    ), s AS (
-      SELECT event_type,
-             CAST(count(*) AS HUGEINT) AS n,
-             sum(rx2) AS sx, sum(ry2) AS sy,
-             sum(rx2 * rx2) AS sxx, sum(ry2 * ry2) AS syy,
-             sum(rx2 * ry2) AS sxy
-      FROM r GROUP BY event_type
-    )
-    SELECT event_type, CAST(n AS BIGINT) AS n_events,
-           CAST(floor(CAST(n * sxy - sx * sy AS DOUBLE)
-                      / sqrt(CAST(n * sxx - sx * sx AS DOUBLE)
-                             * CAST(n * syy - sy * sy AS DOUBLE))
-                      * 1000000.0 + 0.5) AS BIGINT) / 1000000.0 AS spearman_rho
-    FROM s
-    """
-
-
-@register("stats_spearman_corr", oracle=_spearman_oracle())
-def stats_spearman_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spearman rank correlation between event value and hour-of-day,
-    per event type — the monotonic-association test (does value drift
-    across the day?), tie-exact via midranks.
-
-    Ranks never materialize per row from a sort: both variables
-    pre-aggregate to their distinct-value histograms, midranks come
-    from the (cum, cnt) window over those bounded domains (doubled to
-    stay integral), and each event row joins its two midranks back.
-    All five sufficient sums are exact decimal integers; the one
-    final expression (Pearson on midranks) runs in doubles whose
-    inputs are casts of identical integers on both engines, with
-    matching association order, sqrt being correctly rounded — then a
-    single micro-unit quantization. Scale: two domain-bounded windows
-    plus one corpus-wide partial-aggregated sum; no row-level sort.
-    """
-    t = Tables(spark, sf_dir)
-    from ..functions.exact import quantize
-
-    q = t.events.select(
-        "event_type",
-        quantize(F.col("value"), 3).alias("v_m"),
-        F.hour("ts").cast("long").alias("h"),
-    )
-    wv = Window.partitionBy("event_type").orderBy("v_m").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    wh = Window.partitionBy("event_type").orderBy("h").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    vx = q.groupBy("event_type", "v_m").agg(F.count(F.lit(1)).alias("cnt")).select(
-        "event_type",
-        "v_m",
-        "cnt",
-        F.coalesce(F.sum("cnt").over(wv), F.lit(0)).alias("cum"),
-    )
-    vy = q.groupBy("event_type", "h").agg(F.count(F.lit(1)).alias("cnt")).select(
-        "event_type",
-        "h",
-        "cnt",
-        F.coalesce(F.sum("cnt").over(wh), F.lit(0)).alias("cum"),
-    )
-    r = (
-        q.join(
-            vx.select(
-                "event_type", "v_m", (2 * F.col("cum") + F.col("cnt") + 1).alias("rx2")
-            ),
-            ["event_type", "v_m"],
-        )
-        .join(
-            F.broadcast(
-                vy.select(
-                    "event_type",
-                    "h",
-                    (2 * F.col("cum") + F.col("cnt") + 1).alias("ry2"),
-                )
-            ),
-            ["event_type", "h"],
-        )
-        .select("event_type", dec38(F.col("rx2")).alias("rx2"), dec38(F.col("ry2")).alias("ry2"))
-    )
-    s = r.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("rx2").alias("sx"),
-        F.sum("ry2").alias("sy"),
-        F.sum(F.col("rx2") * F.col("rx2")).alias("sxx"),
-        F.sum(F.col("ry2") * F.col("ry2")).alias("syy"),
-        F.sum(F.col("rx2") * F.col("ry2")).alias("sxy"),
-    )
-    n = dec38(F.col("n"))
-    num = (n * F.col("sxy") - F.col("sx") * F.col("sy")).cast("double")
-    denx = (n * F.col("sxx") - F.col("sx") * F.col("sx")).cast("double")
-    deny = (n * F.col("syy") - F.col("sy") * F.col("sy")).cast("double")
-    rho = (
-        F.floor(num / F.sqrt(denx * deny) * F.lit(1e6) + F.lit(0.5)).cast("long")
-        / F.lit(1e6)
-    )
-    return s.select(
-        "event_type", F.col("n").alias("n_events"), rho.alias("spearman_rho")
     )
 
 
@@ -998,141 +570,6 @@ def text_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_ranks",
         round_big_int_ratio(F.col("num"), F.col("denx")).alias("zipf_slope"),
         r2.alias("r_squared"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# 11. Single change-point detection (binary segmentation, 1 split)
-# ---------------------------------------------------------------------------
-
-
-def _binseg_oracle() -> str:
-    return """
-    WITH daily AS (
-      SELECT event_type, CAST(ts AS DATE) AS d,
-             CAST(sum(CAST(floor(value * 100.0 + 0.5) AS BIGINT)) AS BIGINT)
-               AS cents
-      FROM events GROUP BY 1, 2
-    ), idx AS (
-      SELECT event_type, d, cents,
-             row_number() OVER (PARTITION BY event_type ORDER BY d) AS i,
-             CAST(count(*) OVER (PARTITION BY event_type) AS BIGINT) AS n,
-             CAST(sum(cents) OVER (PARTITION BY event_type) AS BIGINT) AS s,
-             CAST(sum(cents) OVER (PARTITION BY event_type ORDER BY d)
-                  AS BIGINT) AS sl
-      FROM daily
-    ), cand AS (
-      SELECT event_type, d, i, n,
-             CAST(i AS BIGINT) AS nl, n - i AS nr,
-             sl, s - sl AS sr,
-             CASE WHEN sl >= 0
-               THEN  ((200::HUGEINT * sl + i) // (2::HUGEINT * i))
-               ELSE -((200::HUGEINT * (-sl) + i) // (2::HUGEINT * i)) END AS dl_q2,
-             CASE WHEN (s - sl) >= 0
-               THEN  ((200::HUGEINT * (s - sl) + (n - i)) // (2::HUGEINT * (n - i)))
-               ELSE -((200::HUGEINT * (sl - s) + (n - i)) // (2::HUGEINT * (n - i)))
-             END AS dr_q2
-      FROM idx WHERE i < n
-    ), scored AS (
-      SELECT event_type, d, nl, nr,
-             CAST(floor(
-               (CAST(dl_q2 AS DOUBLE) / 100.0 - CAST(dr_q2 AS DOUBLE) / 100.0)
-               * (CAST(dl_q2 AS DOUBLE) / 100.0 - CAST(dr_q2 AS DOUBLE) / 100.0)
-               * CAST(nl AS DOUBLE) * CAST(nr AS DOUBLE)
-               / CAST(nl + nr AS DOUBLE) + 0.5) AS BIGINT) AS t_q
-      FROM cand
-    ), best AS (
-      SELECT event_type, d, nl, nr, t_q,
-             row_number() OVER (PARTITION BY event_type
-                                ORDER BY t_q DESC, d) AS rn
-      FROM scored
-    )
-    SELECT event_type, CAST(d AS TIMESTAMP) AS change_day,
-           CAST(nl AS BIGINT) AS n_before, CAST(nr AS BIGINT) AS n_after, t_q
-    FROM best WHERE rn = 1
-    """
-
-
-@register("stats_changepoint_binseg", oracle=_binseg_oracle())
-def stats_changepoint_binseg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Single change-point detection on the daily revenue series per
-    event type — binary segmentation's first split: the day whose
-    before/after mean shift maximizes the pooled two-sample statistic
-    d^2 * nL * nR / n (the CUSUM-family scan complementary to
-    ``events_cusum_changepoint``, which flags drift online; this
-    locates the globally best breakpoint offline).
-
-    Candidate evaluation is prefix-sum algebra on the BOUNDED daily
-    series: each split's side means are exact half-up cents ratios
-    (2 dp, int128/decimal domain), the scan statistic then runs in
-    doubles derived from those identical quantized integers with
-    matching association, and the argmax tie-breaks on day. One
-    window pass + one |days|-row ranking per type — no O(days^2).
-    """
-    t = Tables(spark, sf_dir)
-    daily = (
-        t.events.select(
-            "event_type",
-            F.to_date("ts").alias("d"),
-            F.floor(F.col("value") * F.lit(100.0) + F.lit(0.5))
-            .cast("long")
-            .alias("c_row"),
-        )
-        .groupBy("event_type", "d")
-        .agg(F.sum("c_row").alias("cents"))
-    )
-    wp = Window.partitionBy("event_type")
-    idx = daily.select(
-        "event_type",
-        "d",
-        F.row_number().over(wp.orderBy("d")).alias("i"),
-        F.count(F.lit(1)).over(wp).alias("n"),
-        F.sum("cents").over(wp).alias("s"),
-        F.sum("cents").over(wp.orderBy("d")).alias("sl"),
-    )
-
-    def half_up_signed(num, den, scale):
-        a_ = F.lit(2 * scale).cast("decimal(38,0)") * F.abs(num) + den
-        b_ = F.lit(2).cast("decimal(38,0)") * den
-        mag = ((a_ - a_ % b_) / b_).cast("long")
-        return F.when(num < 0, -mag).otherwise(mag)
-
-    cand = idx.where(F.col("i") < F.col("n")).select(
-        "event_type",
-        "d",
-        F.col("i").cast("long").alias("nl"),
-        (F.col("n") - F.col("i")).alias("nr"),
-        half_up_signed(dec38(F.col("sl")), dec38(F.col("i")), 100).alias("dl_q2"),
-        half_up_signed(
-            dec38(F.col("s")) - dec38(F.col("sl")),
-            dec38(F.col("n")) - dec38(F.col("i")),
-            100,
-        ).alias("dr_q2"),
-    )
-    diff = F.col("dl_q2").cast("double") / F.lit(100.0) - F.col("dr_q2").cast(
-        "double"
-    ) / F.lit(100.0)
-    t_q = F.floor(
-        diff
-        * diff
-        * F.col("nl").cast("double")
-        * F.col("nr").cast("double")
-        / (F.col("nl") + F.col("nr")).cast("double")
-        + F.lit(0.5)
-    ).cast("long")
-    scored = cand.select("event_type", "d", "nl", "nr", t_q.alias("t_q"))
-    best = scored.select(
-        "*",
-        F.row_number()
-        .over(Window.partitionBy("event_type").orderBy(F.col("t_q").desc(), "d"))
-        .alias("rn"),
-    ).where(F.col("rn") == 1)
-    return best.select(
-        "event_type",
-        F.col("d").cast("timestamp").alias("change_day"),
-        F.col("nl").alias("n_before"),
-        F.col("nr").alias("n_after"),
-        "t_q",
     )
 
 
@@ -1509,7 +946,7 @@ def ml_decision_stump(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = Tables(spark, sf_dir)
     o = t.orders.select(
         (
-            F.floor(F.col("o_totalprice") * F.lit(100.0) + F.lit(0.5)).cast("long")
+            order_cents()
             / F.lit(STUMP_BIN_CENTS)
         )
         .cast("long")
@@ -1592,167 +1029,6 @@ def ml_decision_stump(spark: SparkSession, sf_dir: str) -> DataFrame:
             dec38(F.greatest(b["posl"], b["negl"])) + dec38(F.greatest(b["posr"], b["negr"])),
             dec38(F.col("nt")),
         ).alias("stump_accuracy"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# 15. Kendall tau-b (concordance over the bounded bucket grid)
-# ---------------------------------------------------------------------------
-
-KT_VBINS = 10
-
-
-def _kendall_oracle() -> str:
-    return f"""
-    WITH q AS (
-      SELECT event_type,
-             CAST(floor(value * 1000.0 + 0.5) AS BIGINT) AS v_m,
-             CAST(hour(ts) AS BIGINT) AS h
-      FROM events
-    ), ext AS (
-      SELECT event_type, CAST(min(v_m) AS BIGINT) AS mn, CAST(max(v_m) AS BIGINT) AS mx
-      FROM q GROUP BY event_type
-    ), cells AS (
-      SELECT q.event_type,
-             least(CAST(floor((q.v_m - e.mn) * {KT_VBINS}
-                              / (e.mx - e.mn + 1)) AS BIGINT),
-                   {KT_VBINS - 1}) AS vb,
-             q.h,
-             CAST(count(*) AS HUGEINT) AS n
-      FROM q JOIN ext e USING (event_type)
-      GROUP BY 1, 2, 3
-    ), pairs AS (
-      SELECT a.event_type,
-             sum(CASE WHEN b.vb > a.vb AND b.h > a.h THEN a.n * b.n ELSE 0 END)
-               AS c2,
-             sum(CASE WHEN b.vb > a.vb AND b.h < a.h THEN a.n * b.n ELSE 0 END)
-               AS d2
-      FROM cells a JOIN cells b USING (event_type)
-      GROUP BY a.event_type
-    ), ties AS (
-      SELECT event_type,
-             CAST(sum(n) AS HUGEINT) AS nn,
-             sum(n * (n - 1)) AS tie_cell2
-      FROM cells GROUP BY event_type
-    ), tx AS (
-      SELECT event_type, sum(rn * (rn - 1)) AS tie_x2
-      FROM (SELECT event_type, vb, CAST(sum(n) AS HUGEINT) AS rn
-            FROM cells GROUP BY 1, 2)
-      GROUP BY event_type
-    ), ty AS (
-      SELECT event_type, sum(rn * (rn - 1)) AS tie_y2
-      FROM (SELECT event_type, h, CAST(sum(n) AS HUGEINT) AS rn
-            FROM cells GROUP BY 1, 2)
-      GROUP BY event_type
-    )
-    SELECT t.event_type, CAST(t.nn AS BIGINT) AS n_events,
-           CAST(floor(CAST(p.c2 - p.d2 AS DOUBLE)
-                      / sqrt(CAST(t.nn * (t.nn - 1) - x.tie_x2 AS DOUBLE)
-                             * CAST(t.nn * (t.nn - 1) - y.tie_y2 AS DOUBLE))
-                      * 1000000.0 + 0.5) AS BIGINT) / 1000000.0 AS kendall_tau_b
-    FROM ties t
-    JOIN pairs p USING (event_type)
-    JOIN tx x USING (event_type)
-    JOIN ty y USING (event_type)
-    """
-
-
-@register("stats_kendall_tau_b", oracle=_kendall_oracle())
-def stats_kendall_tau_b(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Kendall tau-b between event value (10 equal-width bins) and
-    hour-of-day, per event type — the concordance-based association
-    test completing the correlation trio (Pearson = linear, Spearman =
-    monotonic-by-rank, Kendall = pairwise-concordance; tau-b's tie
-    correction makes it the right one for coarsely-bucketed data).
-
-    Concordant/discordant pair counts NEVER enumerate row pairs: the
-    corpus collapses to a 10 x 24 contingency grid (value bin x hour)
-    and the pair sums run over grid-cell pairs (bounded at 240^2)
-    with exact int128 products; tie corrections come from the grid's
-    margins. One final double expression (sqrt of exact integers,
-    matching association) and a micro-unit quantization. The binning
-    itself is pure integer arithmetic off broadcast min/max — no
-    data-dependent float edges.
-    """
-    t = Tables(spark, sf_dir)
-    from ..functions.exact import quantize
-
-    q = t.events.select(
-        "event_type",
-        quantize(F.col("value"), 3).alias("v_m"),
-        F.hour("ts").cast("long").alias("h"),
-    )
-    ext = q.groupBy("event_type").agg(
-        F.min("v_m").alias("mn"), F.max("v_m").alias("mx")
-    )
-    vb = F.least(
-        F.floor(
-            ((F.col("v_m") - F.col("mn")) * KT_VBINS)
-            / (F.col("mx") - F.col("mn") + 1)
-        ).cast("long"),
-        F.lit(KT_VBINS - 1).cast("long"),
-    )
-    cells = (
-        q.join(F.broadcast(ext), "event_type")
-        .select("event_type", vb.alias("vb"), "h")
-        .groupBy("event_type", "vb", "h")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    b = cells.select(
-        F.col("event_type").alias("et_b"),
-        F.col("vb").alias("vb_b"),
-        F.col("h").alias("h_b"),
-        F.col("n").alias("n_b"),
-    )
-    pairs = (
-        cells.join(b, F.col("et_b") == F.col("event_type"))
-        .groupBy("event_type")
-        .agg(
-            F.sum(
-                F.when(
-                    (F.col("vb_b") > F.col("vb")) & (F.col("h_b") > F.col("h")),
-                    dec38(F.col("n")) * dec38(F.col("n_b")),
-                ).otherwise(F.lit(0).cast("decimal(38,0)"))
-            ).alias("c2"),
-            F.sum(
-                F.when(
-                    (F.col("vb_b") > F.col("vb")) & (F.col("h_b") < F.col("h")),
-                    dec38(F.col("n")) * dec38(F.col("n_b")),
-                ).otherwise(F.lit(0).cast("decimal(38,0)"))
-            ).alias("d2"),
-        )
-    )
-    ties = cells.groupBy("event_type").agg(F.sum("n").alias("nn"))
-    tx = (
-        cells.groupBy("event_type", "vb")
-        .agg(F.sum("n").alias("rn"))
-        .groupBy("event_type")
-        .agg(F.sum(dec38(F.col("rn")) * (dec38(F.col("rn")) - 1)).alias("tie_x2"))
-    )
-    ty = (
-        cells.groupBy("event_type", "h")
-        .agg(F.sum("n").alias("rn"))
-        .groupBy("event_type")
-        .agg(F.sum(dec38(F.col("rn")) * (dec38(F.col("rn")) - 1)).alias("tie_y2"))
-    )
-    nn = dec38(F.col("nn"))
-    tau = (
-        F.floor(
-            (F.col("c2") - F.col("d2")).cast("double")
-            / F.sqrt(
-                (nn * (nn - 1) - F.col("tie_x2")).cast("double")
-                * (nn * (nn - 1) - F.col("tie_y2")).cast("double")
-            )
-            * F.lit(1e6)
-            + F.lit(0.5)
-        ).cast("long")
-        / F.lit(1e6)
-    )
-    return (
-        ties.join(pairs, "event_type")
-        .join(tx, "event_type")
-        .join(ty, "event_type")
-        .select("event_type", F.col("nn").alias("n_events"), tau.alias("kendall_tau_b"))
     )
 
 

@@ -14,6 +14,12 @@ extend the driver-mandated engine families (SURVEY.md §2.C: warehouse
 statistics, DQ, text analysis, model metrics) with the standard
 published formulations (HHI: Herfindahl 1950; Cramér's V: Cramér 1946;
 burstiness B=(σ−μ)/(σ+μ): Goh & Barabási 2008).
+
+``stats_hhi_supplier_concentration``, ``stats_js_divergence_priority``,
+``stats_km_log_survival`` and ``stats_overdispersion_vmr`` live in
+``operators/stats_dist.py``; ``stats_cramers_v_priority_status`` and
+``stats_odds_ratio_woolf`` live in ``operators/stats_tables.py`` with
+the other stats queries.
 """
 
 from __future__ import annotations
@@ -25,282 +31,6 @@ from pyspark.sql.window import Window
 from ..functions.exact import dec38
 from ..registry import register
 from ..tables import Tables
-
-
-# ---------------------------------------------------------------------------
-# 1. Herfindahl-Hirschman supplier concentration by nation
-# ---------------------------------------------------------------------------
-
-
-def _hhi_oracle() -> str:
-    return """
-    WITH rev AS (
-      SELECT s.s_nationkey, l.l_suppkey,
-             CAST(sum(CAST(floor(l.l_extendedprice * (1 - l.l_discount) * 100.0
-                                 + 0.5) AS BIGINT)) AS HUGEINT) AS cents
-      FROM lineitem l JOIN supplier s ON s.s_suppkey = l.l_suppkey
-      GROUP BY 1, 2
-    ), agg AS (
-      SELECT s_nationkey,
-             CAST(count(*) AS BIGINT) AS n_suppliers,
-             sum(cents * cents) AS sq,
-             sum(cents) AS tot
-      FROM rev GROUP BY 1
-    )
-    SELECT n.n_name AS nation, n_suppliers,
-           CAST(((2000000::HUGEINT * sq + tot * tot)
-                 // (2::HUGEINT * tot * tot)) AS BIGINT) / 1000000.0 AS hhi
-    FROM agg JOIN nation n ON n.n_nationkey = agg.s_nationkey
-    ORDER BY nation
-    """
-
-
-@register("stats_hhi_supplier_concentration", oracle=_hhi_oracle())
-def stats_hhi_supplier_concentration(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Herfindahl-Hirschman index of supplier revenue concentration
-    within each supplier nation — the market-structure statistic
-    (HHI = sum of squared revenue shares; 1/n = perfect competition,
-    1 = monopoly).
-
-    Exactness: revenue quantizes to cents (int64 per row, exact sum),
-    then HHI = sum(s_i^2) / S^2 entirely in decimal(38,0) — cents-sums
-    at 100 TB square to ~1e26, far past int64, so this is the
-    round_big_int_ratio discipline applied to a sum-of-squares
-    numerator (ADVICE r5 overflow class).
-
-    Scale: one partial-aggregated fact groupBy on (nationkey, suppkey)
-    after a broadcast join to supplier; the squaring reduce is
-    |suppliers| rows, the output |nations|.
-    """
-    from ..functions.exact import quantize, round_big_int_ratio
-
-    t = Tables(spark, sf_dir)
-    rev = (
-        t.lineitem.join(
-            F.broadcast(t.supplier.select("s_suppkey", "s_nationkey")),
-            t.lineitem.l_suppkey == F.col("s_suppkey"),
-        )
-        .groupBy("s_nationkey", "l_suppkey")
-        .agg(
-            F.sum(
-                quantize(
-                    F.col("l_extendedprice") * (1 - F.col("l_discount")), 2
-                )
-            ).alias("cents")
-        )
-    )
-    agg = rev.groupBy("s_nationkey").agg(
-        F.count(F.lit(1)).alias("n_suppliers"),
-        F.sum(dec38(F.col("cents")) * dec38(F.col("cents"))).alias("sq"),
-        F.sum(dec38(F.col("cents"))).alias("tot"),
-    )
-    return (
-        agg.join(
-            F.broadcast(t.nation.select("n_nationkey", "n_name")),
-            agg.s_nationkey == F.col("n_nationkey"),
-        )
-        .select(
-            F.col("n_name").alias("nation"),
-            "n_suppliers",
-            round_big_int_ratio(
-                F.col("sq"), dec38(F.col("tot")) * dec38(F.col("tot"))
-            ).alias("hhi"),
-        )
-        .orderBy("nation")
-    )
-
-
-# ---------------------------------------------------------------------------
-# 2. Cramér's V association: order priority x order status
-# ---------------------------------------------------------------------------
-
-
-def _cramers_oracle() -> str:
-    return """
-    WITH cell AS (
-      SELECT o_orderpriority AS pri, o_orderstatus AS st,
-             CAST(count(*) AS BIGINT) AS o
-      FROM orders GROUP BY 1, 2
-    ), tot AS (
-      SELECT CAST(sum(o) AS HUGEINT) AS n,
-             CAST(count(DISTINCT pri) AS BIGINT) AS k_r,
-             CAST(count(DISTINCT st) AS BIGINT) AS k_c
-      FROM cell
-    ), margins AS (
-      SELECT c.pri, c.st, c.o,
-             CAST(sum(c.o) OVER (PARTITION BY c.pri) AS HUGEINT) AS r,
-             CAST(sum(c.o) OVER (PARTITION BY c.st) AS HUGEINT) AS cc
-      FROM cell c
-    ), terms AS (
-      SELECT m.pri, m.st,
-             CAST(floor(
-               (CAST(m.o * t.n - m.r * m.cc AS DOUBLE)
-                * CAST(m.o * t.n - m.r * m.cc AS DOUBLE))
-               / CAST(t.n * m.r * m.cc AS DOUBLE)
-               * 1000000000.0 + 0.5) AS BIGINT) AS term_q
-      FROM margins m CROSS JOIN tot t
-    ), chi AS (
-      SELECT CAST(sum(term_q) AS BIGINT) AS chi2_q FROM terms
-    )
-    SELECT CAST(t.n AS BIGINT) AS n_orders,
-           CAST(t.k_r AS BIGINT) AS k_priorities,
-           CAST(t.k_c AS BIGINT) AS k_statuses,
-           chi2_q / 1000000000.0 AS chi2,
-           CAST(floor(sqrt((chi2_q / 1000000000.0)
-                           / (CAST(t.n AS DOUBLE)
-                              * CAST(least(t.k_r, t.k_c) - 1 AS DOUBLE)))
-                      * 1000000.0 + 0.5) AS BIGINT) / 1000000.0 AS cramers_v
-    FROM chi CROSS JOIN tot t
-    """
-
-
-@register("stats_cramers_v_priority_status", oracle=_cramers_oracle())
-def stats_cramers_v_priority_status(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Cramér's V association between order priority and order status
-    — the [0,1]-normalized chi-square for two categoricals (the
-    chi-square statistic itself grows with N; V is comparable across
-    fixture scales).
-
-    Exactness: chi2 = sum over cells of (o*N - r*c)^2 / (N*r*c). The
-    numerator o*N - r*c (|.| <= N^2, exact in decimal(38,0)/HUGEINT up
-    to N ~ 1e12 orders) and the denominator N*r*c (<= N^3, 34 digits
-    at N ~ 1e11) are exact integers; the per-cell term is computed in
-    DOUBLE off those exact integers (square after the correctly-rounded
-    cast, so nothing overflows 38 digits — squaring in decimal would
-    reach ~N^4 ~ 1e44 and overflow, the round-6 draft's bug), quantized
-    half-up at 1e-9 to a bigint, and the integer term sum is exact.
-    Both engines evaluate the identical double expression tree on the
-    same exact inputs (decimal->double casts are correctly rounded on
-    both), so the quantized terms are bit-identical cross-engine. The
-    final sqrt runs on a bit-identical double on both engines.
-
-    Scale: one groupBy over the 15-cell contingency; margins via
-    windows over 15 rows; single-row output (final-aggregate
-    SinglePartition, sanctioned).
-    """
-    t = Tables(spark, sf_dir)
-    cell = t.orders.groupBy(
-        F.col("o_orderpriority").alias("pri"),
-        F.col("o_orderstatus").alias("st"),
-    ).agg(F.count(F.lit(1)).alias("o"))
-    tot = cell.agg(
-        F.sum("o").alias("n"),
-        F.countDistinct("pri").alias("k_r"),
-        F.countDistinct("st").alias("k_c"),
-    )
-    m = cell.select(
-        "pri",
-        "st",
-        "o",
-        F.sum("o").over(Window.partitionBy("pri")).alias("r"),
-        F.sum("o").over(Window.partitionBy("st")).alias("cc"),
-    )
-    j = m.crossJoin(F.broadcast(tot))
-    num = (
-        dec38(F.col("o")) * dec38(F.col("n"))
-        - dec38(F.col("r")) * dec38(F.col("cc"))
-    ).cast("double")
-    den = (
-        dec38(F.col("n")) * dec38(F.col("r")) * dec38(F.col("cc"))
-    ).cast("double")
-    terms = j.select(
-        "n",
-        "k_r",
-        "k_c",
-        F.floor(num * num / den * F.lit(1_000_000_000.0) + F.lit(0.5))
-        .cast("long")
-        .alias("term_q"),
-    )
-    chi = terms.groupBy("n", "k_r", "k_c").agg(
-        F.sum("term_q").alias("chi2_q")
-    )
-    chi2 = F.col("chi2_q") / F.lit(1_000_000_000.0)
-    v = F.sqrt(
-        chi2
-        / (
-            F.col("n").cast("double")
-            * (F.least("k_r", "k_c") - F.lit(1)).cast("double")
-        )
-    )
-    return chi.select(
-        F.col("n").alias("n_orders"),
-        F.col("k_r").alias("k_priorities"),
-        F.col("k_c").alias("k_statuses"),
-        chi2.alias("chi2"),
-        (F.floor(v * F.lit(1_000_000.0) + F.lit(0.5)).cast("long")
-         / F.lit(1_000_000.0)).alias("cramers_v"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# 3. Variance-to-mean overdispersion of daily event counts
-# ---------------------------------------------------------------------------
-
-
-def _vmr_oracle() -> str:
-    return """
-    WITH daily AS (
-      SELECT event_type, date_trunc('day', ts) AS day,
-             CAST(count(*) AS BIGINT) AS c
-      FROM events GROUP BY 1, 2
-    ), agg AS (
-      SELECT event_type,
-             CAST(count(*) AS HUGEINT) AS n,
-             CAST(sum(c) AS HUGEINT) AS s,
-             CAST(sum(c * c) AS HUGEINT) AS q
-      FROM daily GROUP BY 1
-    )
-    SELECT event_type,
-           CAST(n AS BIGINT) AS n_days,
-           CAST(s AS BIGINT) AS n_events,
-           CAST(((2000000::HUGEINT * s + n) // (2::HUGEINT * n)) AS BIGINT)
-             / 1000000.0 AS mean_daily,
-           CAST(((2000000::HUGEINT * (n * q - s * s) + (n * s))
-                 // (2::HUGEINT * n * s)) AS BIGINT) / 1000000.0 AS vmr
-    FROM agg
-    ORDER BY event_type
-    """
-
-
-@register("stats_overdispersion_vmr", oracle=_vmr_oracle())
-def stats_overdispersion_vmr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Variance-to-mean ratio (index of dispersion) of daily event
-    counts per event type — the standard Poisson-ness check (VMR = 1
-    under Poisson; > 1 means bursty/overdispersed arrivals), the
-    dispersion companion to ``events_poisson_rate_test``'s rate
-    comparison.
-
-    Exactness: population variance / mean collapses to the integer
-    ratio (n*sum(c^2) - S^2) / (n*S) — numerator in decimal/HUGEINT
-    (day-count squares sum past int64 at large SF), one half-up
-    quantization at 1e-6.
-
-    Scale: groupBy (event_type, day) partial-aggregates map-side to
-    |types|*|days| rows; the moment reduce is |types| rows.
-    """
-    from ..functions.exact import round_big_int_ratio
-
-    t = Tables(spark, sf_dir)
-    daily = t.events.groupBy(
-        "event_type", F.date_trunc("day", F.col("ts")).alias("day")
-    ).agg(F.count(F.lit(1)).alias("c"))
-    agg = daily.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("c").alias("s"),
-        F.sum(dec38(F.col("c")) * dec38(F.col("c"))).alias("q"),
-    )
-    n, s, q = dec38(F.col("n")), dec38(F.col("s")), F.col("q")
-    return agg.select(
-        "event_type",
-        F.col("n").alias("n_days"),
-        F.col("s").alias("n_events"),
-        round_big_int_ratio(s, n).alias("mean_daily"),
-        round_big_int_ratio(n * q - s * s, n * s).alias("vmr"),
-    ).orderBy("event_type")
 
 
 # ---------------------------------------------------------------------------
@@ -945,405 +675,6 @@ def ml_score_ks_separation(spark: SparkSession, sf_dir: str) -> DataFrame:
     return d.select("lang", "n_pos", "n_neg", ks.alias("ks_stat")).orderBy(
         "lang"
     )
-
-
-# ---------------------------------------------------------------------------
-# 12. Jensen-Shannon divergence of priority mix per nation
-# ---------------------------------------------------------------------------
-
-
-def _js_oracle() -> str:
-    from ..functions.detmath import sql_det_ln_steps
-
-    return f"""
-    WITH cust_orders AS (
-      SELECT c.c_nationkey, o.o_orderpriority AS pri
-      FROM orders o JOIN customer c ON c.c_custkey = o.o_custkey
-    ), cell AS (
-      SELECT c_nationkey, pri, CAST(count(*) AS BIGINT) AS c
-      FROM cust_orders GROUP BY 1, 2
-    ), nat AS (
-      SELECT c_nationkey, CAST(sum(c) AS BIGINT) AS n FROM cell GROUP BY 1
-    ), gpri AS (
-      SELECT pri, CAST(sum(c) AS BIGINT) AS g FROM cell GROUP BY 1
-    ), tot AS (
-      SELECT CAST(sum(c) AS BIGINT) AS big_n FROM cell
-    ), grid AS (
-      SELECT nat.c_nationkey, nat.n, gpri.pri, gpri.g, tot.big_n,
-             coalesce(cell.c, 0) AS c
-      FROM nat CROSS JOIN gpri CROSS JOIN tot
-      LEFT JOIN cell ON cell.c_nationkey = nat.c_nationkey
-                    AND cell.pri = gpri.pri
-    ), pq AS (
-      SELECT c_nationkey, n, c, g, big_n,
-             CAST(c AS DOUBLE) / CAST(n AS DOUBLE) AS p,
-             CAST(g AS DOUBLE) / CAST(big_n AS DOUBLE) AS q
-      FROM grid
-    ), pm AS (
-      SELECT *, (p + q) * 0.5 AS m FROM pq
-    ), {sql_det_ln_steps('pm', 'p / m', 'lnp', as_double=True)},
-    {sql_det_ln_steps('lnp_rel', 'q / m', 'lnq', as_double=True)},
-    terms AS (
-      SELECT c_nationkey, n,
-             CAST(floor(
-               (CASE WHEN c > 0 THEN 0.5 * p * lnp ELSE 0.0 END
-                + CASE WHEN g > 0 THEN 0.5 * q * lnq ELSE 0.0 END)
-               * 1000000000.0 + 0.5) AS BIGINT) AS term_q
-      FROM lnq_rel
-    ), agg AS (
-      SELECT c_nationkey, n, CAST(sum(term_q) AS BIGINT) AS js_q
-      FROM terms GROUP BY 1, 2
-    )
-    SELECT nn.n_name AS nation, agg.n AS n_orders,
-           js_q / 1000000000.0 AS js_nats
-    FROM agg JOIN nation nn ON nn.n_nationkey = agg.c_nationkey
-    ORDER BY nation
-    """
-
-
-@register("stats_js_divergence_priority", oracle=_js_oracle())
-def stats_js_divergence_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Jensen-Shannon divergence between each nation's order-priority
-    mix and the global mix — the symmetric, bounded (<= ln 2)
-    distribution-drift score; the same statistic a corpus pipeline
-    runs between a shard's language mix and the corpus mix
-    (``dq_psi_value_drift`` is the banded PSI twin; JS is the
-    information-theoretic one).
-
-    Determinism: p, q, m = (p+q)/2 are single correctly-rounded double
-    ops on exact integer counts; ln comes from the fixed-point
-    deterministic ln (functions/detmath.py), each 0.5*p*ln(p/m) term
-    quantizes to 1e-9 int64 per grid cell, and the per-nation sum is
-    exact. Zero cells contribute their defined limits (0 for p=0).
-
-    Scale: one fact groupBy to the |nations|x|priorities| grid;
-    everything after is 125-row scalar math. The det-ln fold is
-    interpreted, which is why it runs on the collapsed grid, never on
-    fact rows.
-    """
-    from ..functions.detmath import det_ln_dbl
-
-    t = Tables(spark, sf_dir)
-    cell = (
-        t.orders.join(
-            F.broadcast(t.customer.select("c_custkey", "c_nationkey")),
-            t.orders.o_custkey == F.col("c_custkey"),
-        )
-        .groupBy("c_nationkey", F.col("o_orderpriority").alias("pri"))
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    nat = cell.groupBy("c_nationkey").agg(F.sum("c").alias("n"))
-    glob = cell.groupBy("pri").agg(F.sum("c").alias("g"))
-    tot = cell.agg(F.sum("c").alias("big_n"))
-    grid = (
-        nat.crossJoin(F.broadcast(glob))
-        .crossJoin(F.broadcast(tot))
-        .join(cell, ["c_nationkey", "pri"], "left")
-        .select(
-            "c_nationkey",
-            "n",
-            "g",
-            "big_n",
-            F.coalesce(F.col("c"), F.lit(0)).alias("c"),
-        )
-    )
-    p = F.col("c").cast("double") / F.col("n").cast("double")
-    q = F.col("g").cast("double") / F.col("big_n").cast("double")
-    m = (p + q) * F.lit(0.5)
-    t_p = F.when(F.col("c") > 0, F.lit(0.5) * p * det_ln_dbl(p / m)).otherwise(
-        F.lit(0.0)
-    )
-    t_q = F.when(F.col("g") > 0, F.lit(0.5) * q * det_ln_dbl(q / m)).otherwise(
-        F.lit(0.0)
-    )
-    terms = grid.select(
-        "c_nationkey",
-        "n",
-        F.floor((t_p + t_q) * F.lit(1_000_000_000.0) + F.lit(0.5))
-        .cast("long")
-        .alias("term_q"),
-    )
-    agg = terms.groupBy("c_nationkey", "n").agg(F.sum("term_q").alias("js_q"))
-    return (
-        agg.join(
-            F.broadcast(t.nation.select("n_nationkey", "n_name")),
-            agg.c_nationkey == F.col("n_nationkey"),
-        )
-        .select(
-            F.col("n_name").alias("nation"),
-            F.col("n").alias("n_orders"),
-            (F.col("js_q") / F.lit(1_000_000_000.0)).alias("js_nats"),
-        )
-        .orderBy("nation")
-    )
-
-
-# ---------------------------------------------------------------------------
-# 13. Log odds ratio of urgent orders per nation, Woolf CI
-# ---------------------------------------------------------------------------
-
-WOOLF_Z = 1.96
-
-
-def _odds_oracle() -> str:
-    from ..functions.detmath import sql_det_ln_steps
-
-    return f"""
-    WITH cust_orders AS (
-      SELECT c.c_nationkey,
-             CASE WHEN o.o_orderpriority = '1-URGENT' THEN 1 ELSE 0 END AS urg
-      FROM orders o JOIN customer c ON c.c_custkey = o.o_custkey
-    ), per AS (
-      SELECT c_nationkey,
-             CAST(sum(urg) AS BIGINT) AS a,
-             CAST(sum(1 - urg) AS BIGINT) AS b
-      FROM cust_orders GROUP BY 1
-    ), tot AS (
-      SELECT CAST(sum(a) AS BIGINT) AS ta, CAST(sum(b) AS BIGINT) AS tb
-      FROM per
-    ), cells AS (
-      SELECT p.c_nationkey, p.a, p.b,
-             t.ta - p.a AS c, t.tb - p.b AS d
-      FROM per p CROSS JOIN tot t
-    ), hald AS (
-      SELECT *,
-             CAST(a AS DOUBLE) + 0.5 AS ah, CAST(b AS DOUBLE) + 0.5 AS bh,
-             CAST(c AS DOUBLE) + 0.5 AS ch, CAST(d AS DOUBLE) + 0.5 AS dh
-      FROM cells
-    ), orv AS (
-      SELECT *, (ah * dh) / (bh * ch) AS orate,
-             sqrt(1.0 / ah + 1.0 / bh + 1.0 / ch + 1.0 / dh) AS se
-      FROM hald
-    ), {sql_det_ln_steps('orv', 'orate', 'lnor', as_double=True)}
-    SELECT nn.n_name AS nation, a, b, c, d,
-           CAST(floor(lnor * 1000000.0 + 0.5) AS BIGINT) / 1000000.0
-             AS log_or,
-           CAST(floor((lnor - {WOOLF_Z!r}::DOUBLE * se) * 1000000.0 + 0.5)
-                AS BIGINT) / 1000000.0 AS ci_lo,
-           CAST(floor((lnor + {WOOLF_Z!r}::DOUBLE * se) * 1000000.0 + 0.5)
-                AS BIGINT) / 1000000.0 AS ci_hi
-    FROM lnor_rel JOIN nation nn ON nn.n_nationkey = lnor_rel.c_nationkey
-    ORDER BY nation
-    """
-
-
-@register("stats_odds_ratio_woolf", oracle=_odds_oracle())
-def stats_odds_ratio_woolf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Log odds ratio of urgent-order incidence, each nation vs the
-    rest of the world, with the Woolf 95% confidence interval — the
-    case-control effect-size report (reported in the log domain, where
-    the CI is symmetric and no exp() is needed; readers exponentiate
-    off-line).
-
-    Determinism: cells take the Haldane-Anscombe +0.5 correction
-    (always-defined OR, exact double halves), the OR is two exact-int
-    products and one correctly-rounded divide, ln is the deterministic
-    fixed-point ln, and the Woolf standard error is a left-to-right
-    sum of four correctly-rounded reciprocals — every step
-    bit-identical across engines before 1e-6 quantization.
-
-    Scale: one fact groupBy to |nations| rows + a broadcast 1-row
-    total; all effect-size math is 25-row scalar.
-    """
-    from ..functions.detmath import det_ln_dbl
-
-    t = Tables(spark, sf_dir)
-    per = (
-        t.orders.join(
-            F.broadcast(t.customer.select("c_custkey", "c_nationkey")),
-            t.orders.o_custkey == F.col("c_custkey"),
-        )
-        .groupBy("c_nationkey")
-        .agg(
-            F.sum(
-                F.when(F.col("o_orderpriority") == "1-URGENT", 1).otherwise(0)
-            ).alias("a"),
-            F.sum(
-                F.when(F.col("o_orderpriority") == "1-URGENT", 0).otherwise(1)
-            ).alias("b"),
-        )
-    )
-    tot = per.agg(F.sum("a").alias("ta"), F.sum("b").alias("tb"))
-    cells = per.crossJoin(F.broadcast(tot)).select(
-        "c_nationkey",
-        "a",
-        "b",
-        (F.col("ta") - F.col("a")).alias("c"),
-        (F.col("tb") - F.col("b")).alias("d"),
-    )
-    ah = F.col("a").cast("double") + F.lit(0.5)
-    bh = F.col("b").cast("double") + F.lit(0.5)
-    ch = F.col("c").cast("double") + F.lit(0.5)
-    dh = F.col("d").cast("double") + F.lit(0.5)
-    orate = (ah * dh) / (bh * ch)
-    se = F.sqrt(
-        F.lit(1.0) / ah + F.lit(1.0) / bh + F.lit(1.0) / ch + F.lit(1.0) / dh
-    )
-    lnor = det_ln_dbl(orate)
-    q6 = lambda col: (  # noqa: E731
-        F.floor(col * F.lit(1_000_000.0) + F.lit(0.5)).cast("long")
-        / F.lit(1_000_000.0)
-    )
-    out = cells.select(
-        "c_nationkey",
-        "a",
-        "b",
-        "c",
-        "d",
-        q6(lnor).alias("log_or"),
-        q6(lnor - F.lit(WOOLF_Z) * se).alias("ci_lo"),
-        q6(lnor + F.lit(WOOLF_Z) * se).alias("ci_hi"),
-    )
-    return (
-        out.join(
-            F.broadcast(t.nation.select("n_nationkey", "n_name")),
-            out.c_nationkey == F.col("n_nationkey"),
-        )
-        .select(
-            F.col("n_name").alias("nation"),
-            "a",
-            "b",
-            "c",
-            "d",
-            "log_or",
-            "ci_lo",
-            "ci_hi",
-        )
-        .orderBy("nation")
-    )
-
-
-# ---------------------------------------------------------------------------
-# 14. Kaplan-Meier log-survival of shipment transit time
-# ---------------------------------------------------------------------------
-
-
-def _km_oracle() -> str:
-    from ..functions.detmath import sql_det_ln_steps
-
-    return f"""
-    WITH obs AS (
-      SELECT l.l_returnflag AS flag,
-             CAST(datediff('day', o.o_orderdate, l.l_shipdate) AS BIGINT)
-               AS dur,
-             CASE WHEN l.l_linestatus = 'F' THEN 1 ELSE 0 END AS ev
-      FROM lineitem l JOIN orders o ON o.o_orderkey = l.l_orderkey
-    ), pts AS (
-      SELECT flag, dur,
-             CAST(sum(ev) AS BIGINT) AS d,
-             CAST(sum(1 - ev) AS BIGINT) AS w
-      FROM obs GROUP BY 1, 2
-    ), risk AS (
-      SELECT flag, dur, d, w,
-             CAST(sum(d + w) OVER (PARTITION BY flag) AS BIGINT)
-               - CAST(coalesce(sum(d + w) OVER (
-                   PARTITION BY flag ORDER BY dur
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-                 AS BIGINT) AS n_risk
-      FROM pts
-    ), kept AS (
-      SELECT * FROM risk WHERE NOT (d > 0 AND n_risk = d)
-    ), rat AS (
-      SELECT *, CAST(n_risk - d AS DOUBLE) / CAST(n_risk AS DOUBLE) AS sratio
-      FROM kept
-    ), {sql_det_ln_steps('rat', 'sratio', 'lnq', dp=9)},
-    terms AS (
-      SELECT flag, dur, d, w, n_risk,
-             CASE WHEN d > 0 THEN lnq ELSE 0 END AS term_q
-      FROM lnq_rel
-    )
-    SELECT flag AS return_flag, dur AS transit_days, n_risk,
-           d AS n_events, w AS n_censored,
-           CAST(sum(term_q) OVER (PARTITION BY flag ORDER BY dur
-                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-             / 1000000000.0 AS log_survival
-    FROM terms
-    ORDER BY return_flag, transit_days
-    """
-
-
-@register("stats_km_log_survival", oracle=_km_oracle())
-def stats_km_log_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Kaplan-Meier survival curve of order-to-ship latency
-    (orderdate→shipdate), one curve per return flag, with right-censoring:
-    open-status lines (l_linestatus <> 'F') count as censored at their
-    observed duration — they leave the risk set without an "event".
-    Reported as log-survival: logS(t) = sum over event times <= t of
-    ln(1 - d/n), the form in which the product-limit estimator is a
-    SUM and therefore exact under quantization (S itself would need
-    exp; readers exponentiate off-line).
-
-    Determinism: risk-set sizes and event counts are exact integers
-    computed on the collapsed (flag, duration) curve, the hazard ratio
-    (n-d)/n is one correctly-rounded double divide, and ln is the
-    deterministic fixed-point ln quantized to 1e-9 per step, so the
-    running sum is integer-exact. The terminal point where the whole
-    risk set fails (S -> 0, logS -> -inf) is excluded by definition.
-
-    Scale: the fact scan collapses to |flags| x |distinct durations|
-    rows before any window; the ordered passes run per flag on the
-    ~100-point curve, never on raw lineitem.
-    """
-    from ..functions.detmath import det_ln_q
-
-    t = Tables(spark, sf_dir)
-    obs = t.lineitem.join(
-        t.orders.select("o_orderkey", "o_orderdate"),
-        t.lineitem.l_orderkey == F.col("o_orderkey"),
-    ).select(
-        F.col("l_returnflag").alias("flag"),
-        F.datediff("l_shipdate", "o_orderdate").cast("long").alias("dur"),
-        F.when(F.col("l_linestatus") == "F", 1).otherwise(0).alias("ev"),
-    )
-    pts = obs.groupBy("flag", "dur").agg(
-        F.sum("ev").alias("d"), F.sum(F.lit(1) - F.col("ev")).alias("w")
-    )
-    w_tot = Window.partitionBy("flag")
-    w_prev = (
-        Window.partitionBy("flag")
-        .orderBy("dur")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    risk = pts.select(
-        "flag",
-        "dur",
-        "d",
-        "w",
-        (
-            F.sum(F.col("d") + F.col("w")).over(w_tot)
-            - F.coalesce(
-                F.sum(F.col("d") + F.col("w")).over(w_prev), F.lit(0)
-            )
-        ).alias("n_risk"),
-    ).where(~((F.col("d") > 0) & (F.col("n_risk") == F.col("d"))))
-    sratio = (F.col("n_risk") - F.col("d")).cast("double") / F.col(
-        "n_risk"
-    ).cast("double")
-    terms = risk.select(
-        "flag",
-        "dur",
-        "d",
-        "w",
-        "n_risk",
-        F.when(F.col("d") > 0, det_ln_q(sratio, 9)).otherwise(F.lit(0)).alias(
-            "term_q"
-        ),
-    )
-    w_cum = (
-        Window.partitionBy("flag")
-        .orderBy("dur")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    return terms.select(
-        F.col("flag").alias("return_flag"),
-        F.col("dur").alias("transit_days"),
-        "n_risk",
-        F.col("d").alias("n_events"),
-        F.col("w").alias("n_censored"),
-        (F.sum("term_q").over(w_cum) / F.lit(1_000_000_000.0)).alias(
-            "log_survival"
-        ),
-    ).orderBy("return_flag", "transit_days")
 
 
 # ---------------------------------------------------------------------------

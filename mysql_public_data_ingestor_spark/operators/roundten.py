@@ -10,6 +10,10 @@ exact bitmap), discrete churn hazard (the derivative view of the
 Kaplan-Meier curve), Benford second-digit forensics, binary-payload
 dedup (the multimodal family's blob-store planner), and a Gamma
 method-of-moments fit (completing Weibull/NegBin/Gumbel).
+
+``stats_page_trend_l`` lives in ``operators/stats_rank.py``;
+``stats_gamma_latency_fit_moments`` lives in ``operators/stats_dist.py``
+with the other stats queries.
 """
 
 from __future__ import annotations
@@ -18,138 +22,10 @@ import math
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
-from ..functions.exact import dec38
+from ..functions.exact import order_cents
 from ..registry import register
 from ..tables import Tables
-
-
-# ---------------------------------------------------------------------------
-# 1. Page's L trend test: ordered priority effect, blocked by nation
-# ---------------------------------------------------------------------------
-
-
-def _page_l_oracle() -> str:
-    return """
-    WITH cells AS (
-      SELECT c.c_nationkey AS blk, o.o_orderpriority AS trt,
-             CAST(count(*) AS BIGINT) AS n_cell,
-             CAST(sum(CAST(floor(o.o_totalprice * 100.0 + 0.5) AS BIGINT)::HUGEINT)
-                  AS HUGEINT) AS s_cell
-      FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-      GROUP BY 1, 2
-    ), kk AS (
-      SELECT CAST(count(DISTINCT trt) AS BIGINT) AS k FROM cells
-    ), complete AS (
-      SELECT blk FROM cells, kk GROUP BY blk, kk.k
-      HAVING count(*) = max(kk.k)
-    ), ranked AS (
-      SELECT c.blk, c.trt,
-             CAST(substr(c.trt, 1, 1) AS BIGINT) AS j,
-             CAST(row_number() OVER (PARTITION BY c.blk
-                  ORDER BY CAST(c.s_cell AS DOUBLE) / c.n_cell, c.trt)
-                  AS BIGINT) AS rnk
-      FROM cells c JOIN complete b USING (blk)
-    ), l AS (
-      SELECT CAST(sum(j * rnk) AS BIGINT) AS page_l FROM ranked
-    ), s AS (
-      SELECT CAST(max(kk.k) AS BIGINT) AS k,
-             CAST(count(*) AS BIGINT) AS b
-      FROM complete, kk GROUP BY kk.k
-    )
-    SELECT s.k, s.b AS n_blocks, l.page_l,
-           s.b * s.k * (s.k + 1) * (s.k + 1) AS e_l_x4,
-           CASE WHEN s.b > 0 AND s.k > 1 THEN
-             CAST(floor(3.0::DOUBLE
-                        * CAST(4 * l.page_l
-                               - s.b * s.k * (s.k + 1) * (s.k + 1) AS DOUBLE)
-                        / sqrt(CAST(s.b * s.k * s.k * (s.k + 1)
-                                    * (s.k * s.k - 1) AS DOUBLE))
-                        * 1000000.0 + 0.5) AS BIGINT) / 1000000.0
-           END AS z_page
-    FROM l, s
-    """
-
-
-@register("stats_page_trend_l", oracle=_page_l_oracle())
-def stats_page_trend_l(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Page's L trend test for an ORDERED priority effect on mean
-    order value, blocked by customer nation: L = sum_j j * R_j over
-    the same within-block rank table Friedman uses
-    (``stats_friedman_nation_priority``) — Friedman asks "do the
-    priorities differ at all", Page concentrates the power on the
-    ordered alternative (value rising monotonically from 1-URGENT to
-    5-LOW), the blocked twin of Jonckheere-Terpstra.
-
-    Reuses the Friedman construction verbatim (complete blocks only;
-    deterministic (mean, label) rank ordering, tie-free by total
-    order); the treatment index j is the priority label's leading
-    digit. L, E(L)x4 = b k (k+1)^2 and Var(L)x144 = b k^2 (k+1)
-    (k^2-1) are exact integers; z = 3(4L - E4)/sqrt(V144) evaluates
-    in double once, quantized half-up 1e-6. The ranked table is
-    |nations| x |priorities| rows off one partial-aggregated join.
-    """
-    t = Tables(spark, sf_dir)
-    cents = F.floor(F.col("o_totalprice") * F.lit(100.0) + F.lit(0.5)).cast("long")
-    cells = (
-        t.orders.select(
-            "o_custkey", F.col("o_orderpriority").alias("trt"), cents.alias("cents")
-        )
-        .join(
-            t.customer.select(
-                F.col("c_custkey").alias("o_custkey"),
-                F.col("c_nationkey").alias("blk"),
-            ),
-            "o_custkey",
-        )
-        .groupBy("blk", "trt")
-        .agg(
-            F.count(F.lit(1)).alias("n_cell"),
-            F.sum(dec38(F.col("cents"))).alias("s_cell"),
-        )
-    )
-    kk = cells.agg(F.countDistinct("trt").alias("k"))
-    complete = (
-        cells.join(F.broadcast(kk))
-        .groupBy("blk")
-        .agg(F.count(F.lit(1)).alias("n_trt"), F.max("k").alias("k"))
-        .filter(F.col("n_trt") == F.col("k"))
-        .select("blk")
-    )
-    w = Window.partitionBy("blk").orderBy(
-        F.col("s_cell").cast("double") / F.col("n_cell"), F.col("trt")
-    )
-    ranked = cells.join(complete, "blk").select(
-        F.substring("trt", 1, 1).cast("long").alias("j"),
-        F.row_number().over(w).cast("long").alias("rnk"),
-    )
-    l_ = ranked.agg(F.sum(F.col("j") * F.col("rnk")).alias("page_l"))
-    s = complete.agg(F.count(F.lit(1)).alias("b")).crossJoin(F.broadcast(kk))
-    st = l_.crossJoin(F.broadcast(s))
-    e4 = F.col("b") * F.col("k") * (F.col("k") + 1) * (F.col("k") + 1)
-    v144 = (
-        F.col("b")
-        * F.col("k")
-        * F.col("k")
-        * (F.col("k") + 1)
-        * (F.col("k") * F.col("k") - 1)
-    )
-    z = (
-        F.lit(3.0)
-        * (4 * F.col("page_l") - e4).cast("double")
-        / F.sqrt(v144.cast("double"))
-    )
-    return st.select(
-        "k",
-        F.col("b").alias("n_blocks"),
-        "page_l",
-        e4.alias("e_l_x4"),
-        F.when(
-            (F.col("b") > 0) & (F.col("k") > 1),
-            F.floor(z * F.lit(1000000.0) + F.lit(0.5)).cast("long") / F.lit(1e6),
-        ).alias("z_page"),
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -422,7 +298,7 @@ def dq_benford_second_digit_totals(spark: SparkSession, sf_dir: str) -> DataFram
     order exists anywhere. One scan to a 10-row grid.
     """
     t = Tables(spark, sf_dir)
-    cents = F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")
+    cents = order_cents()
     v = t.orders.select(cents.alias("cents")).filter(F.col("cents") >= 10)
     d2 = v.select(F.substring(F.col("cents").cast("string"), 2, 1).cast("long").alias("digit"))
     obs = d2.groupBy("digit").agg(F.count(F.lit(1)).alias("observed"))
@@ -522,84 +398,4 @@ def multimodal_payload_dedup_manifest(spark: SparkSession, sf_dir: str) -> DataF
         )
         .orderBy(F.col("bytes_saved").desc(), "payload_sha")
         .limit(PAYLOAD_DEDUP_TOPK)
-    )
-
-
-# ---------------------------------------------------------------------------
-# 6. Gamma fit of shipment latency (method of moments)
-# ---------------------------------------------------------------------------
-
-
-def _gamma_oracle() -> str:
-    return """
-    WITH lat AS (
-      SELECT CAST(date_diff('day', o.o_orderdate, l.l_shipdate) AS BIGINT) AS v
-      FROM lineitem l JOIN orders o ON o.o_orderkey = l.l_orderkey
-      WHERE date_diff('day', o.o_orderdate, l.l_shipdate) >= 1
-    ), a AS (
-      SELECT CAST(count(*) AS BIGINT) AS n,
-             CAST(sum(v) AS HUGEINT) AS s,
-             CAST(sum(v::HUGEINT * v) AS HUGEINT) AS q
-      FROM lat
-    )
-    SELECT n,
-           CAST(floor(CAST(s AS DOUBLE) / CAST(n AS DOUBLE) * 1000000.0 + 0.5)
-                AS BIGINT) / 1000000.0 AS mean_days,
-           CAST(floor((CAST(s AS DOUBLE) / CAST(n AS DOUBLE))
-                      * (CAST(s AS DOUBLE) / CAST(n AS DOUBLE))
-                      / ((CAST(n AS DOUBLE) * CAST(q AS DOUBLE)
-                          - CAST(s AS DOUBLE) * CAST(s AS DOUBLE))
-                         / (CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0::DOUBLE)))
-                      * 1000000.0 + 0.5) AS BIGINT) / 1000000.0 AS gamma_shape,
-           CAST(floor(((CAST(n AS DOUBLE) * CAST(q AS DOUBLE)
-                        - CAST(s AS DOUBLE) * CAST(s AS DOUBLE))
-                       / (CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0::DOUBLE)))
-                      / (CAST(s AS DOUBLE) / CAST(n AS DOUBLE))
-                      * 1000000.0 + 0.5) AS BIGINT) / 1000000.0 AS gamma_scale
-    FROM a WHERE n >= 2
-    """
-
-
-@register("stats_gamma_latency_fit_moments", oracle=_gamma_oracle())
-def stats_gamma_latency_fit_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gamma(shape k, scale theta) method-of-moments fit of
-    order-to-ship latency: k = mean^2/var, theta = var/mean — the
-    sum-of-exponential-stages read of the logistics pipeline (k ~= 2
-    says two queueing stages; Weibull's wear-in story and Gamma's
-    stage story bracket the same latency body, which is why
-    reliability toolboxes fit both — completing the
-    Weibull/NegBin/Gumbel distribution-fitting family).
-
-    One join-scan accumulates exact (n, sum, sum-of-squares) in
-    decimal; shape and scale evaluate in double from those exact
-    integers with identical association order in both engines,
-    quantized half-up 1e-6. Sample variance (n-1) throughout.
-    """
-    t = Tables(spark, sf_dir)
-    lat = (
-        t.lineitem.join(
-            t.orders, t.lineitem.l_orderkey == t.orders.o_orderkey
-        )
-        .select(F.datediff(F.col("l_shipdate"), F.col("o_orderdate")).cast("long").alias("v"))
-        .filter(F.col("v") >= 1)
-    )
-    a = lat.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(dec38(F.col("v"))).alias("s"),
-        F.sum(dec38(F.col("v")) * F.col("v")).alias("q"),
-    ).filter(F.col("n") >= 2)
-    nd = F.col("n").cast("double")
-    mean = F.col("s").cast("double") / nd
-    var = (nd * F.col("q").cast("double") - F.col("s").cast("double") * F.col("s").cast("double")) / (
-        nd * (nd - F.lit(1.0))
-    )
-
-    def q6(c):
-        return F.floor(c * F.lit(1000000.0) + F.lit(0.5)).cast("long") / F.lit(1e6)
-
-    return a.select(
-        "n",
-        q6(mean).alias("mean_days"),
-        q6(mean * mean / var).alias("gamma_shape"),
-        q6(var / mean).alias("gamma_scale"),
     )

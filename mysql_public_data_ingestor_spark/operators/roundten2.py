@@ -22,6 +22,12 @@ unpartitioned window over data-scaled rows.
 ``events_variance_ratio_test``, ``stats_runs_up_down_daily`` and
 ``stats_cusum_squares_changepoint`` live in ``operators/daily_*.py``
 with the other daily-series queries.
+
+``stats_permutation_test_ab`` and ``stats_quade_nation_priority`` live
+in ``operators/stats_rank.py``; ``stats_total_variation_segment_pairs``
+lives in ``operators/stats_dist.py``;
+``stats_mantel_haenszel_priority_nation`` lives in
+``operators/stats_tables.py`` with the other stats queries.
 """
 
 from __future__ import annotations
@@ -475,263 +481,6 @@ def events_funnel_path_signatures(spark: SparkSession, sf_dir: str) -> DataFrame
         round_int_ratio(F.col("n_converted"), F.col("n_users")).alias("conversion"),
     )
     return out.orderBy(F.col("n_users").desc(), "signature").limit(PATHSIG_TOPK)
-
-
-# ---------------------------------------------------------------------------
-# 5. Quade test over the nation x priority block design
-# ---------------------------------------------------------------------------
-
-
-def _quade_oracle() -> str:
-    from ..functions.exact import sql_round_big_int_ratio
-
-    return f"""
-    WITH cells AS (
-      SELECT c.c_nationkey AS blk, o.o_orderpriority AS trt,
-             CAST(count(*) AS BIGINT) AS n_cell,
-             CAST(sum(CAST(floor(o.o_totalprice * 100.0 + 0.5) AS BIGINT)::HUGEINT)
-                  AS HUGEINT) AS s_cell
-      FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-      GROUP BY 1, 2
-    ), kk AS (SELECT CAST(count(DISTINCT trt) AS BIGINT) AS k FROM cells),
-    complete AS (
-      SELECT blk FROM cells, kk GROUP BY blk, kk.k
-      HAVING count(*) = max(kk.k)
-    ), m AS (
-      SELECT c.blk, c.trt, CAST(c.s_cell AS DOUBLE) / c.n_cell AS mu
-      FROM cells c JOIN complete USING (blk)
-    ), ranked AS (
-      SELECT blk, trt,
-             CAST(row_number() OVER (PARTITION BY blk ORDER BY mu, trt)
-                  AS BIGINT) AS r
-      FROM m
-    ), rng AS (
-      SELECT blk, max(mu) - min(mu) AS rg FROM m GROUP BY blk
-    ), qrank AS (
-      SELECT a.blk,
-             CAST(1 + count(b.blk) AS BIGINT) AS qr
-      FROM rng a LEFT JOIN rng b
-        ON (b.rg < a.rg) OR (b.rg = a.rg AND b.blk < a.blk)
-      GROUP BY a.blk
-    ), tt AS (
-      SELECT r.trt, q.qr * (2 * r.r - (kk.k + 1)) AS t_ij
-      FROM ranked r JOIN qrank q USING (blk), kk
-    ), bb AS (SELECT CAST(count(*) AS BIGINT) AS b FROM complete),
-    agg AS (
-      SELECT CAST(sum(t_ij::HUGEINT * t_ij) AS HUGEINT) AS a2 FROM tt
-    ), tj AS (
-      SELECT trt, CAST(sum(t_ij) AS BIGINT) AS t_j FROM tt GROUP BY trt
-    ), bstat AS (
-      SELECT CAST(sum(t_j::HUGEINT * t_j) AS HUGEINT) AS b2 FROM tj
-    )
-    SELECT kk.k, bb.b AS n_blocks,
-           CAST(agg.a2 AS BIGINT) AS a2, CAST(bstat.b2 AS BIGINT) AS b2,
-           CASE WHEN bb.b * agg.a2 - bstat.b2 > 0 THEN
-             {sql_round_big_int_ratio(
-                 '(bb.b - 1)::HUGEINT * bstat.b2',
-                 'bb.b::HUGEINT * agg.a2 - bstat.b2')}
-           END AS quade_f
-    FROM kk, bb, agg, bstat
-    """
-
-
-@register("stats_quade_nation_priority", oracle=_quade_oracle())
-def stats_quade_nation_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quade's test over the nation-blocked priority design: the
-    WEIGHTED block-rank test completing the blocked-design family
-    (Friedman = unweighted "is there an effect", Page = "is it
-    ordered", Kendall's W = effect size; Quade weights each block by
-    the rank of its RANGE, so blocks where treatments actually differ
-    count more — the more powerful test when block sensitivity
-    varies, which skewed nation sizes guarantee here).
-
-    The per-block observation is the cell mean (exact cents sum over
-    exact count — double division is identical IEEE in both engines);
-    within-block ranks come from a blk-partitioned window; the block
-    weights come from a broadcast self-join rank over the <= |nations|
-    range table (no global window). T_ij = Q_i(2r_ij - (k+1)) makes
-    the whole statistic integer: F = (b-1)*sum T_j^2 / (b*sum T_ij^2
-    - sum T_j^2), one exact half-up ratio.
-    """
-    from ..functions.exact import round_big_int_ratio
-
-    t = Tables(spark, sf_dir)
-    cents = F.floor(F.col("o_totalprice") * F.lit(100.0) + F.lit(0.5)).cast("long")
-    cells = (
-        t.orders.select(
-            "o_custkey", F.col("o_orderpriority").alias("trt"), cents.alias("cents")
-        )
-        .join(
-            t.customer.select(
-                F.col("c_custkey").alias("o_custkey"),
-                F.col("c_nationkey").alias("blk"),
-            ),
-            "o_custkey",
-        )
-        .groupBy("blk", "trt")
-        .agg(
-            F.count(F.lit(1)).alias("n_cell"),
-            F.sum(dec38(F.col("cents"))).alias("s_cell"),
-        )
-    )
-    kk = cells.agg(F.countDistinct("trt").alias("k"))
-    complete = (
-        cells.join(F.broadcast(kk))
-        .groupBy("blk")
-        .agg(F.count(F.lit(1)).alias("n_trt"), F.max("k").alias("k"))
-        .filter(F.col("n_trt") == F.col("k"))
-        .select("blk")
-    )
-    m = cells.join(complete, "blk").select(
-        "blk", "trt", (F.col("s_cell").cast("double") / F.col("n_cell")).alias("mu")
-    )
-    w_blk = Window.partitionBy("blk").orderBy("mu", "trt")
-    ranked = m.select("blk", "trt", F.row_number().over(w_blk).cast("long").alias("r"))
-    rng = m.groupBy("blk").agg((F.max("mu") - F.min("mu")).alias("rg"))
-    r2 = rng.select(F.col("blk").alias("blk2"), F.col("rg").alias("rg2"))
-    qrank = (
-        rng.join(
-            F.broadcast(r2),
-            (F.col("rg2") < F.col("rg"))
-            | ((F.col("rg2") == F.col("rg")) & (F.col("blk2") < F.col("blk"))),
-            "left",
-        )
-        .groupBy("blk")
-        .agg((F.lit(1) + F.count("blk2")).cast("long").alias("qr"))
-    )
-    tt = (
-        ranked.join(F.broadcast(qrank), "blk")
-        .crossJoin(F.broadcast(kk))
-        .select(
-            "trt",
-            (dec38(F.col("qr")) * (2 * F.col("r") - (F.col("k") + 1))).alias("t_ij"),
-        )
-    )
-    b = complete.agg(F.count(F.lit(1)).alias("b"))
-    agg = tt.agg(F.sum(F.col("t_ij") * F.col("t_ij")).alias("a2"))
-    tj = tt.groupBy("trt").agg(F.sum("t_ij").alias("t_j"))
-    bstat = tj.agg(F.sum(F.col("t_j") * F.col("t_j")).alias("b2"))
-    out = (
-        kk.crossJoin(F.broadcast(b))
-        .crossJoin(F.broadcast(agg))
-        .crossJoin(F.broadcast(bstat))
-    )
-    den = dec38(F.col("b")) * F.col("a2") - F.col("b2")
-    return out.select(
-        "k",
-        F.col("b").alias("n_blocks"),
-        F.col("a2").cast("long").alias("a2"),
-        F.col("b2").cast("long").alias("b2"),
-        F.when(
-            den > 0,
-            round_big_int_ratio(dec38(F.col("b") - 1) * F.col("b2"), den),
-        ).alias("quade_f"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# 6. Pairwise total-variation distance between segment priority mixes
-# ---------------------------------------------------------------------------
-
-
-def _tvd_oracle() -> str:
-    from ..functions.exact import sql_round_big_int_ratio
-
-    return f"""
-    WITH j AS (
-      SELECT c.c_mktsegment AS seg, o.o_orderpriority AS prio
-      FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-    ), cellraw AS (
-      SELECT seg, prio, CAST(count(*) AS BIGINT) AS cnt FROM j GROUP BY 1, 2
-    ), segs AS (SELECT DISTINCT seg FROM j),
-    prios AS (SELECT DISTINCT prio FROM j),
-    cell AS (
-      SELECT s.seg, p.prio, coalesce(c.cnt, 0) AS cnt
-      FROM segs s CROSS JOIN prios p
-      LEFT JOIN cellraw c ON c.seg = s.seg AND c.prio = p.prio
-    ), tots AS (
-      SELECT seg, CAST(sum(cnt) AS BIGINT) AS n FROM cell GROUP BY seg
-    ), pairs AS (
-      SELECT a.seg AS seg_a, b.seg AS seg_b,
-             ta.n AS n_a, tb.n AS n_b,
-             CAST(sum(abs(a.cnt::HUGEINT * tb.n - b.cnt::HUGEINT * ta.n))
-                  AS HUGEINT) AS num
-      FROM cell a
-      JOIN cell b ON a.prio = b.prio AND a.seg < b.seg
-      JOIN tots ta ON ta.seg = a.seg
-      JOIN tots tb ON tb.seg = b.seg
-      GROUP BY 1, 2, 3, 4
-    )
-    SELECT seg_a, seg_b,
-           CASE WHEN n_a > 0 AND n_b > 0 THEN
-             {sql_round_big_int_ratio('num', '2::HUGEINT * n_a * n_b')}
-           END AS tvd
-    FROM pairs ORDER BY seg_a, seg_b
-    """
-
-
-@register("stats_total_variation_segment_pairs", oracle=_tvd_oracle())
-def stats_total_variation_segment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pairwise total-variation distance between the order-priority
-    mixes of every market-segment pair: TVD = (1/2) sum_i |p_i - q_i|
-    — the L1 sibling of the registry's JS divergence (JS is smooth
-    and information-theoretic; TVD is THE metric with the operational
-    reading "max probability gap any event can show between the two
-    segments"), and unlike JS it is EXACT: sum |c_a*n_b - c_b*n_a| /
-    (2 n_a n_b) is one big-integer ratio, no logs.
-
-    One fact-scan aggregate to the |segments| x |priorities| cell
-    grid (completed with zero cells so missing categories count, both
-    engines identically); the pairwise sweep is a broadcast self-join
-    over that <= 25-row grid. Output |segments| choose 2 rows.
-    """
-    from ..functions.exact import round_big_int_ratio
-
-    t = Tables(spark, sf_dir)
-    j = t.orders.select("o_custkey", F.col("o_orderpriority").alias("prio")).join(
-        t.customer.select(
-            F.col("c_custkey").alias("o_custkey"), F.col("c_mktsegment").alias("seg")
-        ),
-        "o_custkey",
-    )
-    cellraw = j.groupBy("seg", "prio").agg(F.count(F.lit(1)).alias("cnt"))
-    segs = cellraw.select("seg").distinct()
-    prios = cellraw.select("prio").distinct()
-    cell = (
-        segs.crossJoin(F.broadcast(prios))
-        .join(cellraw, ["seg", "prio"], "left")
-        .select("seg", "prio", F.coalesce(F.col("cnt"), F.lit(0)).alias("cnt"))
-    )
-    tots = cell.groupBy("seg").agg(F.sum("cnt").alias("n"))
-    a = cell.select(
-        F.col("seg").alias("seg_a"), "prio", F.col("cnt").alias("cnt_a")
-    ).join(F.broadcast(tots.select(F.col("seg").alias("seg_a"), F.col("n").alias("n_a"))), "seg_a")
-    bdf = cell.select(
-        F.col("seg").alias("seg_b"), "prio", F.col("cnt").alias("cnt_b")
-    ).join(F.broadcast(tots.select(F.col("seg").alias("seg_b"), F.col("n").alias("n_b"))), "seg_b")
-    pairs = (
-        a.join(F.broadcast(bdf), ["prio"])
-        .filter(F.col("seg_a") < F.col("seg_b"))
-        .groupBy("seg_a", "seg_b", "n_a", "n_b")
-        .agg(
-            F.sum(
-                F.abs(
-                    dec38(F.col("cnt_a")) * F.col("n_b")
-                    - dec38(F.col("cnt_b")) * F.col("n_a")
-                )
-            ).alias("num")
-        )
-    )
-    return pairs.select(
-        "seg_a",
-        "seg_b",
-        F.when(
-            (F.col("n_a") > 0) & (F.col("n_b") > 0),
-            round_big_int_ratio(
-                F.col("num"), F.lit(2).cast("decimal(38,0)") * F.col("n_a") * F.col("n_b")
-            ),
-        ).alias("tvd"),
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -1706,104 +1455,6 @@ def dedup_lsh_band_tuning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# 18. Mantel-Haenszel common odds ratio across nation strata
-# ---------------------------------------------------------------------------
-
-MH_EXPOSED = ("1-URGENT", "2-HIGH")
-
-
-def _mh_oracle() -> str:
-    from ..functions.exact import sql_round_big_int_ratio
-
-    exp_in = ", ".join(f"'{p}'" for p in MH_EXPOSED)
-    return f"""
-    WITH j AS (
-      SELECT c.c_nationkey AS blk,
-             CASE WHEN o.o_orderpriority IN ({exp_in}) THEN 1 ELSE 0 END AS e,
-             CASE WHEN o.o_orderstatus = 'F' THEN 1 ELSE 0 END AS y
-      FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-    ), cells AS (
-      SELECT blk,
-             CAST(sum(e * y) AS BIGINT) AS a,
-             CAST(sum(e * (1 - y)) AS BIGINT) AS b,
-             CAST(sum((1 - e) * y) AS BIGINT) AS c,
-             CAST(sum((1 - e) * (1 - y)) AS BIGINT) AS d,
-             CAST(count(*) AS BIGINT) AS n
-      FROM j GROUP BY blk
-    ), terms AS (
-      SELECT CAST(count(*) AS BIGINT) AS n_strata,
-             CAST(sum((a::HUGEINT * d * 1000000) // n) AS HUGEINT) AS sum_ad_q,
-             CAST(sum((b::HUGEINT * c * 1000000) // n) AS HUGEINT) AS sum_bc_q
-      FROM cells WHERE n > 0
-    )
-    SELECT n_strata, CAST(sum_ad_q AS BIGINT) AS sum_ad_q,
-           CAST(sum_bc_q AS BIGINT) AS sum_bc_q,
-           CASE WHEN sum_bc_q > 0 THEN
-             {sql_round_big_int_ratio('sum_ad_q', 'sum_bc_q')}
-           END AS mh_odds_ratio
-    FROM terms
-    """
-
-
-@register("stats_mantel_haenszel_priority_nation", oracle=_mh_oracle())
-def stats_mantel_haenszel_priority_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mantel-Haenszel common odds ratio across nation strata:
-    exposure = urgent/high priority, outcome = finished status,
-    stratified by customer nation — THE confounder-adjusted 2x2
-    association estimator (a crude pooled odds ratio is Simpson's-
-    paradox bait when nation sizes and priority mixes differ; MH
-    weights each stratum's ad/n and bc/n so only WITHIN-stratum
-    contrasts count), completing the association family beside the
-    crude odds ratio (Woolf CI) and Cramer's V.
-
-    Deterministic variant: each stratum's ad/n and bc/n term is
-    quantized to exact 1e-6 integer units BEFORE summation (floor
-    division, identical both engines), so the two sums are exact
-    int64 arithmetic and the final ratio one half-up big-ratio — no
-    float accumulation order anywhere. One fact-scan aggregate to
-    |nations| cells, then a constant-size reduce.
-    """
-    from ..functions.exact import round_big_int_ratio
-
-    t = Tables(spark, sf_dir)
-    j = t.orders.select(
-        "o_custkey",
-        F.col("o_orderpriority").isin(*MH_EXPOSED).cast("int").alias("e"),
-        (F.col("o_orderstatus") == "F").cast("int").alias("y"),
-    ).join(
-        t.customer.select(
-            F.col("c_custkey").alias("o_custkey"), F.col("c_nationkey").alias("blk")
-        ),
-        "o_custkey",
-    )
-    cells = j.groupBy("blk").agg(
-        F.sum(F.col("e") * F.col("y")).alias("a"),
-        F.sum(F.col("e") * (1 - F.col("y"))).alias("b"),
-        F.sum((1 - F.col("e")) * F.col("y")).alias("c"),
-        F.sum((1 - F.col("e")) * (1 - F.col("y"))).alias("d"),
-        F.count(F.lit(1)).alias("n"),
-    )
-    terms = cells.filter(F.col("n") > 0).agg(
-        F.count(F.lit(1)).alias("n_strata"),
-        F.sum(
-            F.expr("CAST(a AS DECIMAL(38,0)) * d * 1000000 div n").cast("long")
-        ).alias("sum_ad_q"),
-        F.sum(
-            F.expr("CAST(b AS DECIMAL(38,0)) * c * 1000000 div n").cast("long")
-        ).alias("sum_bc_q"),
-    )
-    return terms.select(
-        "n_strata",
-        "sum_ad_q",
-        "sum_bc_q",
-        F.when(
-            F.col("sum_bc_q") > 0,
-            round_big_int_ratio(dec38(F.col("sum_ad_q")), dec38(F.col("sum_bc_q"))),
-        ).alias("mh_odds_ratio"),
-    )
-
-
-# ---------------------------------------------------------------------------
 # 19. Engagement-class transition matrix across history halves
 # ---------------------------------------------------------------------------
 
@@ -2298,163 +1949,6 @@ def text_unigram_js_lang_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("a_sum") * F.col("n_b") + F.col("b_sum") * F.col("n_a"),
             F.lit(2).cast("decimal(38,0)") * F.col("n_a") * F.col("n_b") * 1000000,
         ).alias("js_divergence"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# 23. Exact randomization (permutation) test for the A/B value gap
-# ---------------------------------------------------------------------------
-
-PERM_B = 64
-
-
-def _perm_oracle() -> str:
-    from ..functions.exact import sql_round_big_int_ratio, sql_round_int_ratio
-
-    B = PERM_B
-    return f"""
-    WITH ux AS (
-      SELECT user_id,
-             CAST(sum(CAST(floor(value * 1000000.0 + 0.5) AS BIGINT)) AS BIGINT)
-               AS x
-      FROM events WHERE event_type = 'purchase'
-      GROUP BY user_id
-    ), obs AS (
-      SELECT CAST(count(*) AS BIGINT) AS n_users,
-             CAST(sum(CASE WHEN user_id % 2 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS na,
-             CAST(sum(CASE WHEN user_id % 2 = 0 THEN x ELSE 0 END) AS HUGEINT) AS sa,
-             CAST(sum(CASE WHEN user_id % 2 = 1 THEN 1 ELSE 0 END) AS BIGINT) AS nb,
-             CAST(sum(CASE WHEN user_id % 2 = 1 THEN x ELSE 0 END) AS HUGEINT) AS sb
-      FROM ux
-    ), perms AS (
-      SELECT s.b,
-             CAST(sum(CASE WHEN s.g = 0 THEN 1 ELSE 0 END) AS BIGINT) AS na,
-             CAST(sum(CASE WHEN s.g = 0 THEN s.x ELSE 0 END) AS HUGEINT) AS sa,
-             CAST(sum(CASE WHEN s.g = 1 THEN 1 ELSE 0 END) AS BIGINT) AS nb,
-             CAST(sum(CASE WHEN s.g = 1 THEN s.x ELSE 0 END) AS HUGEINT) AS sb
-      FROM (
-        SELECT u.user_id, u.x, bb.b,
-               (('0x' || substr(sha256('perm' || CAST(bb.b AS VARCHAR) || '|'
-                 || CAST(u.user_id AS VARCHAR)), 1, 15))::BIGINT % 2) AS g
-        FROM ux u, (SELECT unnest(range(0, {B})) AS b) bb
-      ) s
-      GROUP BY s.b
-    ), cmp AS (
-      SELECT CAST(count(*) AS BIGINT) AS n_exceed
-      FROM perms p, obs o
-      WHERE p.na > 0 AND p.nb > 0
-        AND abs(p.sa * p.nb - p.sb * p.na) * (o.na::HUGEINT * o.nb)
-            >= abs(o.sa * o.nb - o.sb * o.na) * (p.na::HUGEINT * p.nb)
-    )
-    SELECT o.n_users, CAST({B} AS BIGINT) AS n_perms,
-           CASE WHEN o.na > 0 AND o.nb > 0 THEN
-             {sql_round_big_int_ratio(
-                 'o.sa * o.nb - o.sb * o.na',
-                 'o.na::HUGEINT * o.nb * 1000000')}
-           END AS mean_diff_obs,
-           {sql_round_int_ratio('1 + c.n_exceed', f'{B} + 1')} AS p_value
-    FROM obs o, cmp c
-    """
-
-
-@register("stats_permutation_test_ab", oracle=_perm_oracle())
-def stats_permutation_test_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact randomization test for the A/B purchase-value gap:
-    64 deterministic salted-hash relabelings of the user-level spend
-    totals, p = (1 + #{|T_perm| >= |T_obs|}) / 65 — the
-    assumption-free inference the t-test family approximates (Welch
-    assumes normal-ish sampling distributions; the randomization test
-    IS the null distribution, and hash-derived labelings make it
-    RNG-free and bit-reproducible on every engine and rerun).
-
-    One user-keyed aggregate produces the spend totals; the 64
-    relabelings are a broadcast 64-row grid crossed against that
-    AGGREGATE (64x|users| rows, never 64x raw events); each
-    permutation reduces to 4 integers, and every |T_b| >= |T_obs|
-    comparison is cross-multiplied exact decimal arithmetic (valid to
-    ~1e6 users before decimal38 would saturate — beyond that the
-    comparison drops to the deterministic double cast of the same
-    exact integers).
-    """
-    from ..functions.exact import round_big_int_ratio, round_int_ratio
-    from ..functions.textnorm import sha256_prefix_i64
-
-    B = PERM_B
-    t = Tables(spark, sf_dir)
-    ux = (
-        t.events.filter(F.col("event_type") == "purchase")
-        .select(
-            "user_id",
-            F.floor(F.col("value") * F.lit(1000000.0) + F.lit(0.5))
-            .cast("long")
-            .alias("xv"),
-        )
-        .groupBy("user_id")
-        .agg(F.sum("xv").alias("x"))
-        .localCheckpoint(eager=False)
-    )
-    obs = ux.agg(
-        F.count(F.lit(1)).alias("n_users"),
-        F.sum(F.when(F.col("user_id") % 2 == 0, 1).otherwise(0)).alias("na"),
-        F.sum(F.when(F.col("user_id") % 2 == 0, dec38(F.col("x"))).otherwise(
-            F.lit(0).cast("decimal(38,0)"))).alias("sa"),
-        F.sum(F.when(F.col("user_id") % 2 == 1, 1).otherwise(0)).alias("nb"),
-        F.sum(F.when(F.col("user_id") % 2 == 1, dec38(F.col("x"))).otherwise(
-            F.lit(0).cast("decimal(38,0)"))).alias("sb"),
-    )
-    bs = spark.range(B).select(F.col("id").alias("b"))
-    g = (
-        sha256_prefix_i64(
-            F.concat(
-                F.lit("perm"), F.col("b").cast("string"), F.lit("|"),
-                F.col("user_id").cast("string"),
-            )
-        )
-        % 2
-    )
-    perms = (
-        ux.crossJoin(F.broadcast(bs))
-        .select("b", "x", g.alias("g"))
-        .groupBy("b")
-        .agg(
-            F.sum(F.when(F.col("g") == 0, 1).otherwise(0)).alias("na"),
-            F.sum(F.when(F.col("g") == 0, dec38(F.col("x"))).otherwise(
-                F.lit(0).cast("decimal(38,0)"))).alias("sa"),
-            F.sum(F.when(F.col("g") == 1, 1).otherwise(0)).alias("nb"),
-            F.sum(F.when(F.col("g") == 1, dec38(F.col("x"))).otherwise(
-                F.lit(0).cast("decimal(38,0)"))).alias("sb"),
-        )
-    )
-    o = F.broadcast(obs.select(
-        F.col("na").alias("o_na"), F.col("sa").alias("o_sa"),
-        F.col("nb").alias("o_nb"), F.col("sb").alias("o_sb"),
-    ))
-    cmp = (
-        perms.crossJoin(o)
-        .filter(
-            (F.col("na") > 0) & (F.col("nb") > 0)
-            & (
-                F.abs(F.col("sa") * F.col("nb") - F.col("sb") * F.col("na"))
-                * (dec38(F.col("o_na")) * F.col("o_nb"))
-                >= F.abs(
-                    F.col("o_sa") * F.col("o_nb") - F.col("o_sb") * F.col("o_na")
-                )
-                * (dec38(F.col("na")) * F.col("nb"))
-            )
-        )
-        .agg(F.count(F.lit(1)).alias("n_exceed"))
-    )
-    return obs.crossJoin(F.broadcast(cmp)).select(
-        "n_users",
-        F.lit(B).cast("long").alias("n_perms"),
-        F.when(
-            (F.col("na") > 0) & (F.col("nb") > 0),
-            round_big_int_ratio(
-                F.col("sa") * F.col("nb") - F.col("sb") * F.col("na"),
-                dec38(F.col("na")) * F.col("nb") * 1000000,
-            ),
-        ).alias("mean_diff_obs"),
-        round_int_ratio(F.lit(1) + F.col("n_exceed"), F.lit(B + 1)).alias("p_value"),
     )
 
 

@@ -25,6 +25,10 @@ det_ln_q twins); global ordered passes run only over bounded
 POST-AGGREGATION domains (calendar days, score bins, lag grids) via
 broadcast non-equi self-joins or key-partitioned windows — never an
 unpartitioned window over data-scaled rows.
+
+``stats_g_test_dow_type`` lives in ``operators/stats_tables.py``;
+``stats_rayleigh_hour_uniformity`` lives in ``operators/stats_dist.py``
+with the other stats queries.
 """
 
 from __future__ import annotations
@@ -830,101 +834,6 @@ def corpus_truncation_loss_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ===========================================================================
-# Batch 6 (round-10 continuation)
-# ===========================================================================
-
-
-# ---------------------------------------------------------------------------
-# 9. G-test of independence (day-of-week x event type)
-# ---------------------------------------------------------------------------
-
-
-def _gtest_oracle() -> str:
-    from ..functions.detmath import sql_det_ln_steps
-
-    return f"""
-    WITH cells AS (
-      SELECT CAST(dayofweek(CAST(ts AS DATE)) AS BIGINT) AS dow,
-             event_type, CAST(count(*) AS BIGINT) AS o
-      FROM events GROUP BY 1, 2
-    ), margins AS (
-      SELECT c.dow, c.event_type, c.o,
-             r.r, col.c, t.n
-      FROM cells c
-      JOIN (SELECT dow, CAST(sum(o) AS BIGINT) AS r FROM cells GROUP BY dow) r
-        ON r.dow = c.dow
-      JOIN (SELECT event_type, CAST(sum(o) AS BIGINT) AS c FROM cells
-            GROUP BY event_type) col
-        ON col.event_type = c.event_type
-      JOIN (SELECT CAST(sum(o) AS BIGINT) AS n FROM cells) t ON true
-    ), args AS (
-      SELECT dow, event_type, o, r, c, n,
-             o * n AS arg_on, r * c AS arg_rc
-      FROM margins
-    ), {sql_det_ln_steps('args', 'arg_on', 'lon')},
-    {sql_det_ln_steps('lon_rel', 'arg_rc', 'lrc')},
-    terms AS (
-      SELECT CAST(sum(o) AS BIGINT) AS n,
-             CAST(count(DISTINCT dow) AS BIGINT) AS nr,
-             CAST(count(DISTINCT event_type) AS BIGINT) AS nc,
-             CAST(sum(o * (lon - lrc)) AS BIGINT) AS gsum
-      FROM lrc_rel
-    )
-    SELECT n, (nr - 1) * (nc - 1) AS df,
-           CAST(2 * gsum AS BIGINT) / 1000000.0 AS g_stat
-    FROM terms
-    """
-
-
-@register("stats_g_test_dow_type", oracle=_gtest_oracle())
-def stats_g_test_dow_type(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """G-test (likelihood-ratio chi-square) of independence between
-    day-of-week and event type: G = 2 Σ O·ln(O·N/(R·C)) over the
-    7×5-bounded contingency grid — the LR companion to the Pearson
-    chi-square already in the family (stats_chi_square_lang_source);
-    G is additive under partitioning and better-behaved at small
-    expected counts, so it is the one mutual-information decomposes
-    into (G = 2N·MI in nats).
-
-    Every log argument is an exact integer (O·N and R·C, ≤ ~10¹⁵ at
-    sf1×10 — inside 2⁵³), ln via the det_ln_q twins, the G sum a pure
-    int64 accumulation with ONE final /10⁶ display division. Zero
-    cells contribute nothing by construction (grid rows only exist
-    for observed cells). The fact scan partial-aggregates to ≤ 35
-    cells before margins join — three broadcast-size equi-joins on a
-    bounded grid, no data-scaled shuffle beyond the first aggregate.
-    """
-    from ..functions.detmath import det_ln_q
-
-    t = Tables(spark, sf_dir)
-    cells = t.events.groupBy(
-        F.dayofweek(F.to_date("ts")).cast("long").alias("dow"), "event_type"
-    ).agg(F.count(F.lit(1)).alias("o"))
-    r = cells.groupBy("dow").agg(F.sum("o").alias("r"))
-    c = cells.groupBy("event_type").agg(F.sum("o").alias("c"))
-    n = cells.agg(F.sum("o").alias("n"))
-    m = (
-        cells.join(F.broadcast(r), "dow")
-        .join(F.broadcast(c), "event_type")
-        .crossJoin(F.broadcast(n))
-    )
-    term = F.col("o") * (
-        det_ln_q(F.col("o") * F.col("n")) - det_ln_q(F.col("r") * F.col("c"))
-    )
-    agg = m.agg(
-        F.sum("o").alias("n"),
-        F.countDistinct("dow").alias("nr"),
-        F.countDistinct("event_type").alias("nc"),
-        F.sum(term).alias("gsum"),
-    )
-    return agg.select(
-        "n",
-        ((F.col("nr") - 1) * (F.col("nc") - 1)).alias("df"),
-        ((F.lit(2) * F.col("gsum")) / F.lit(1e6)).alias("g_stat"),
-    )
-
-
 # ---------------------------------------------------------------------------
 # 10. Exponential-decay user value at a halflife ladder
 # ---------------------------------------------------------------------------
@@ -1109,102 +1018,6 @@ def privacy_qi_entropy_risk(spark: SparkSession, sf_dir: str) -> DataFrame:
             / F.lit(1e6)
         ).alias("entropy_nats"),
         (det_ln_q(F.col("n_cells")) / F.lit(1e6)).alias("ln_cells"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# 13. Rayleigh test of hour-of-day uniformity per event type
-# ---------------------------------------------------------------------------
-
-# cos/sin(2*pi*h/24) quantized at 1e-6 — the SAME 48 integer literals are
-# embedded in the Spark plan and the SQL twin, so the trig never crosses
-# the engine boundary as a float computation
-RAYLEIGH_COSQ = [1000000, 965926, 866025, 707107, 500000, 258819, 0, -258819, -500000, -707107, -866025, -965926, -1000000, -965926, -866025, -707107, -500000, -258819, 0, 258819, 500000, 707107, 866025, 965926]
-RAYLEIGH_SINQ = [0, 258819, 500000, 707107, 866025, 965926, 1000000, 965926, 866025, 707107, 500000, 258819, 0, -258819, -500000, -707107, -866025, -965926, -1000000, -965926, -866025, -707107, -500000, -258819]
-
-
-def _rayleigh_oracle() -> str:
-    from ..functions.exact import sql_round_big_int_ratio
-
-    cosl = ", ".join(str(v) for v in RAYLEIGH_COSQ)
-    sinl = ", ".join(str(v) for v in RAYLEIGH_SINQ)
-    return f"""
-    WITH hrs AS (
-      SELECT event_type, CAST(hour(ts) AS BIGINT) AS h,
-             CAST(count(*) AS BIGINT) AS c
-      FROM events GROUP BY 1, 2
-    ), vecs AS (
-      SELECT event_type,
-             CAST(sum(c) AS BIGINT) AS n,
-             CAST(sum(c * ([{cosl}])[h + 1]) AS BIGINT) AS sc,
-             CAST(sum(c * ([{sinl}])[h + 1]) AS BIGINT) AS ss
-      FROM hrs GROUP BY event_type
-    )
-    SELECT event_type, n,
-           {sql_round_big_int_ratio(
-               'sc::HUGEINT * sc + ss::HUGEINT * ss',
-               'n::HUGEINT * 1000000000000')} AS rayleigh_z,
-           {sql_round_big_int_ratio(
-               'sc::HUGEINT * sc + ss::HUGEINT * ss',
-               'n::HUGEINT * n * 1000000000000')} AS rbar_sq
-    FROM vecs
-    """
-
-
-@register("stats_rayleigh_hour_uniformity", oracle=_rayleigh_oracle())
-def stats_rayleigh_hour_uniformity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rayleigh test of circular uniformity on the hour-of-day
-    distribution, per event type: z = n·R_bar² where R_bar is the mean
-    resultant length of the unit vectors at angles 2πh/24 — the
-    CIRCULAR-statistics member the family lacked (the hourly-entropy
-    profile measures concentration but ignores adjacency: 9 a.m. and
-    10 a.m. are as different to it as 9 a.m. and 9 p.m.; the Rayleigh
-    resultant knows the hours wrap).
-
-    The 24 cos/sin values are 1e-6-quantized integer LITERALS baked
-    identically into the Spark plan and the SQL twin (module
-    constants), so no engine evaluates a single trig function: the
-    resultant components are int64 dot products over the ≤ 24-row
-    per-type hour histogram and z = (Sc² + Ss²)/(n·10¹²) is one exact
-    round_big_int_ratio (Sc² ≤ ~10²⁵ at sf1×10 — decimal/HUGEINT).
-    Quantizing the direction vectors (not the statistic) shifts z by
-    < 10⁻⁶·n relative — identical on both engines, irrelevant to the
-    uniformity verdict. One partial-aggregated scan to the bounded
-    (type × hour) grid; everything after is a ≤ 5-row aggregate.
-    """
-    from ..functions.exact import round_big_int_ratio
-
-    t = Tables(spark, sf_dir)
-    hrs = t.events.groupBy(
-        "event_type", F.hour("ts").cast("long").alias("h")
-    ).agg(F.count(F.lit(1)).alias("c"))
-    cos_arr = F.array(*[F.lit(v).cast("long") for v in RAYLEIGH_COSQ])
-    sin_arr = F.array(*[F.lit(v).cast("long") for v in RAYLEIGH_SINQ])
-    vecs = hrs.select(
-        "event_type",
-        "c",
-        (F.col("c") * F.element_at(cos_arr, (F.col("h") + 1).cast("int"))).alias(
-            "cc"
-        ),
-        (F.col("c") * F.element_at(sin_arr, (F.col("h") + 1).cast("int"))).alias(
-            "cs"
-        ),
-    ).groupBy("event_type").agg(
-        F.sum("c").alias("n"),
-        F.sum("cc").alias("sc"),
-        F.sum("cs").alias("ss"),
-    )
-    num = dec38(F.col("sc")) * dec38(F.col("sc")) + dec38(F.col("ss")) * dec38(
-        F.col("ss")
-    )
-    scale = F.lit(10**12).cast("decimal(38,0)")
-    return vecs.select(
-        "event_type",
-        "n",
-        round_big_int_ratio(num, dec38(F.col("n")) * scale).alias("rayleigh_z"),
-        round_big_int_ratio(
-            num, dec38(F.col("n")) * dec38(F.col("n")) * scale
-        ).alias("rbar_sq"),
     )
 
 

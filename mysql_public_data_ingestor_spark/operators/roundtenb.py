@@ -12,6 +12,9 @@ monitor with EXACT integer flagging.
 
 ``dq_weekday_volume_anomaly`` lives in ``operators/daily_change.py``
 with the other daily-series queries.
+
+``stats_kendall_w_nation_priority`` lives in ``operators/stats_rank.py``
+with the other stats queries.
 """
 
 from __future__ import annotations
@@ -20,136 +23,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions.exact import dec38
 from ..registry import register
 from ..tables import Tables
-
-
-# ---------------------------------------------------------------------------
-# 1. Kendall's W concordance over the nation x priority rank table
-# ---------------------------------------------------------------------------
-
-
-def _kendall_w_oracle() -> str:
-    from ..functions.exact import sql_round_big_int_ratio
-
-    return f"""
-    WITH cells AS (
-      SELECT c.c_nationkey AS blk, o.o_orderpriority AS trt,
-             CAST(count(*) AS BIGINT) AS n_cell,
-             CAST(sum(CAST(floor(o.o_totalprice * 100.0 + 0.5) AS BIGINT)::HUGEINT)
-                  AS HUGEINT) AS s_cell
-      FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-      GROUP BY 1, 2
-    ), kk AS (
-      SELECT CAST(count(DISTINCT trt) AS BIGINT) AS k FROM cells
-    ), complete AS (
-      SELECT blk FROM cells, kk GROUP BY blk, kk.k
-      HAVING count(*) = max(kk.k)
-    ), ranked AS (
-      SELECT c.trt,
-             CAST(row_number() OVER (PARTITION BY c.blk
-                  ORDER BY CAST(c.s_cell AS DOUBLE) / c.n_cell, c.trt)
-                  AS BIGINT) AS rnk
-      FROM cells c JOIN complete b USING (blk)
-    ), rj AS (
-      SELECT trt, CAST(sum(rnk) AS BIGINT) AS r_j FROM ranked GROUP BY trt
-    ), bb AS (SELECT CAST(count(*) AS BIGINT) AS b FROM complete),
-    s AS (
-      SELECT kk.k, bb.b,
-             CAST(sum((2::HUGEINT * r_j - bb.b::HUGEINT * (kk.k + 1))
-                      * (2::HUGEINT * r_j - bb.b::HUGEINT * (kk.k + 1)))
-                  AS HUGEINT) AS s4
-      FROM rj, kk, bb GROUP BY kk.k, bb.b
-    )
-    SELECT k, b AS n_blocks, CAST(s4 AS BIGINT) AS s4,
-           CASE WHEN b > 0 AND k > 1 THEN
-             {sql_round_big_int_ratio(
-                 '3::HUGEINT * s4',
-                 'b::HUGEINT * b * k * (k * k - 1)')}
-           END AS kendall_w
-    FROM s
-    """
-
-
-@register("stats_kendall_w_nation_priority", oracle=_kendall_w_oracle())
-def stats_kendall_w_nation_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Kendall's coefficient of concordance W over the same
-    nation-blocked priority rank table Friedman and Page use: W =
-    12 sum_j (R_j - b(k+1)/2)^2 / (b^2 k (k^2-1)) — the EFFECT SIZE
-    for the blocked rank design (Friedman answers "is there an
-    effect", Page "is it ordered", W "how strong is the agreement
-    across blocks", the Friedman statistic's chi-square scaled to
-    [0,1]).
-
-    With the deterministic total-order ranking (no ties by
-    construction) W is ONE exact big-integer ratio: S4 = sum (2R_j -
-    b(k+1))^2 makes 12*S = 3*S4, so kendall_w =
-    3*S4 / (b^2 k (k^2-1)) with zero floats anywhere. Same
-    |nations| x |priorities| bounded rank table off one
-    partial-aggregated join.
-    """
-    from ..functions.exact import round_big_int_ratio
-
-    t = Tables(spark, sf_dir)
-    cents = F.floor(F.col("o_totalprice") * F.lit(100.0) + F.lit(0.5)).cast("long")
-    cells = (
-        t.orders.select(
-            "o_custkey", F.col("o_orderpriority").alias("trt"), cents.alias("cents")
-        )
-        .join(
-            t.customer.select(
-                F.col("c_custkey").alias("o_custkey"),
-                F.col("c_nationkey").alias("blk"),
-            ),
-            "o_custkey",
-        )
-        .groupBy("blk", "trt")
-        .agg(
-            F.count(F.lit(1)).alias("n_cell"),
-            F.sum(dec38(F.col("cents"))).alias("s_cell"),
-        )
-    )
-    kk = cells.agg(F.countDistinct("trt").alias("k"))
-    complete = (
-        cells.join(F.broadcast(kk))
-        .groupBy("blk")
-        .agg(F.count(F.lit(1)).alias("n_trt"), F.max("k").alias("k"))
-        .filter(F.col("n_trt") == F.col("k"))
-        .select("blk")
-    )
-    w = Window.partitionBy("blk").orderBy(
-        F.col("s_cell").cast("double") / F.col("n_cell"), F.col("trt")
-    )
-    ranked = cells.join(complete, "blk").select(
-        "trt", F.row_number().over(w).cast("long").alias("rnk")
-    )
-    rj = ranked.groupBy("trt").agg(F.sum("rnk").alias("r_j"))
-    b = complete.agg(F.count(F.lit(1)).alias("b"))
-    kb = kk.crossJoin(F.broadcast(b))
-    dev = F.lit(2).cast("decimal(38,0)") * F.col("r_j") - dec38(F.col("b")) * (
-        F.col("k") + 1
-    )
-    s = rj.crossJoin(F.broadcast(kb)).agg(
-        F.max("k").alias("k"),
-        F.max("b").alias("b"),
-        F.sum(dev * dev).alias("s4"),
-    )
-    den = (
-        dec38(F.col("b"))
-        * F.col("b")
-        * F.col("k")
-        * (F.col("k") * F.col("k") - 1)
-    )
-    return s.select(
-        "k",
-        F.col("b").alias("n_blocks"),
-        F.col("s4").cast("long").alias("s4"),
-        F.when(
-            (F.col("b") > 0) & (F.col("k") > 1),
-            round_big_int_ratio(F.lit(3).cast("decimal(38,0)") * F.col("s4"), den),
-        ).alias("kendall_w"),
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -17,6 +17,9 @@ with the other daily-series queries.
 Reference parity note: the reference (Go ingestion pipeline,
 ``/root/reference/main.go``) has no analytics; these extend SURVEY
 §2.C graph / ML / time-series / warehouse statistics.
+
+``stats_kuiper_ab`` lives in ``operators/stats_rank.py`` with the other
+stats queries.
 """
 
 from __future__ import annotations
@@ -212,113 +215,4 @@ def ml_brier_pav_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
         res.cast("long").alias("res_pav_micro"),
         unc.cast("long").alias("unc_micro"),
         (brier - (unc + rel - res)).cast("long").alias("decomp_residual_micro"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# 5. Kuiper two-sample test on returned-vs-refused quantity
-# ---------------------------------------------------------------------------
-
-
-def _kuiper_oracle() -> str:
-    hd = sql_halfup_div
-    return f"""
-    WITH gv AS (
-      SELECT CAST(l_quantity AS BIGINT) AS v,
-             CAST(sum(CASE WHEN l_returnflag = 'A' THEN 1 ELSE 0 END)
-                  AS HUGEINT) AS na,
-             CAST(sum(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END)
-                  AS HUGEINT) AS nr
-      FROM lineitem
-      WHERE l_returnflag IN ('A', 'R') AND l_quantity IS NOT NULL
-      GROUP BY 1
-    ), cum AS (
-      SELECT a.v, CAST(sum(b.na) AS HUGEINT) AS ca,
-             CAST(sum(b.nr) AS HUGEINT) AS cr
-      FROM gv a JOIN gv b ON b.v <= a.v
-      GROUP BY a.v
-    ), tot AS (
-      SELECT CAST(sum(na) AS HUGEINT) AS n_a, CAST(sum(nr) AS HUGEINT) AS n_r
-      FROM gv
-    ), dd AS (
-      SELECT greatest(0, max(c.ca * t.n_r - c.cr * t.n_a)) AS dp,
-             greatest(0, max(c.cr * t.n_a - c.ca * t.n_r)) AS dm,
-             any_value(t.n_a) AS n_a, any_value(t.n_r) AS n_r
-      FROM cum c, tot t
-    )
-    SELECT CAST(n_a AS BIGINT) AS n_a, CAST(n_r AS BIGINT) AS n_r,
-           CAST({hd('1000000::HUGEINT * dp', 'n_a * n_r')} AS BIGINT)
-             AS d_plus_micro,
-           CAST({hd('1000000::HUGEINT * dm', 'n_a * n_r')} AS BIGINT)
-             AS d_minus_micro,
-           CAST({hd('1000000::HUGEINT * (dp + dm)', 'n_a * n_r')} AS BIGINT)
-             AS kuiper_v_micro
-    FROM dd
-    """
-
-
-@register("stats_kuiper_ab", oracle=_kuiper_oracle())
-def stats_kuiper_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Kuiper two-sample statistic V = D+ + D- for lineitem quantity,
-    returned (A) vs refused (R) lines — the rotation-invariant sibling
-    of Kolmogorov-Smirnov (Kuiper 1960): KS sees only the single
-    largest ECDF gap and goes blind near the distribution tails; V adds
-    the largest gap in EACH direction, giving equal sensitivity across
-    the whole support (the reason it's the standard for cyclic /
-    tail-sensitive comparisons). Complements the CvM / Anderson-Darling
-    quadratic statistics already in the family with the L-infinity
-    pair.
-
-    Exactness: the ECDF gaps compare as cross-multiplied exact integers
-    (ca * n_r vs cr * n_a — never a per-row division); D+ and D- floor
-    at 0 (the sup over an empty excursion set); three half-up micro
-    divisions at the very end.
-
-    Scale shape: one fact scan partial-aggregates to the <= 50-value
-    quantity grid; the ECDF cumulative is a broadcast self-join on the
-    POST-AGGREGATION grid (the cvm/ansari bounded-domain class, no
-    global window); 1 row out. Headroom: ca * n_r <= N^2 ~ 1e24 at
-    1e12 rows — inside decimal(38,0)/HUGEINT.
-    """
-    t = Tables(spark, sf_dir)
-    gv = (
-        t.lineitem.filter(
-            F.col("l_returnflag").isin("A", "R") & F.col("l_quantity").isNotNull()
-        )
-        .select(
-            F.col("l_quantity").cast("long").alias("v"),
-            F.when(F.col("l_returnflag") == "A", 1).otherwise(0).alias("ia"),
-            F.when(F.col("l_returnflag") == "R", 1).otherwise(0).alias("ir"),
-        )
-        .groupBy("v")
-        .agg(F.sum(dec38(F.col("ia"))).alias("na"), F.sum(dec38(F.col("ir"))).alias("nr"))
-    )
-    b = gv.select(
-        F.col("v").alias("v_b"), F.col("na").alias("na_b"), F.col("nr").alias("nr_b")
-    )
-    cum = (
-        gv.join(F.broadcast(b), F.col("v_b") <= F.col("v"))
-        .groupBy("v")
-        .agg(F.sum("na_b").alias("ca"), F.sum("nr_b").alias("cr"))
-    )
-    tot = gv.agg(F.sum("na").alias("n_a"), F.sum("nr").alias("n_r"))
-    zero = F.lit(0).cast("decimal(38,0)")
-    dd = cum.crossJoin(F.broadcast(tot)).agg(
-        F.greatest(zero, F.max(F.col("ca") * F.col("n_r") - F.col("cr") * F.col("n_a")))
-        .alias("dp"),
-        F.greatest(zero, F.max(F.col("cr") * F.col("n_a") - F.col("ca") * F.col("n_r")))
-        .alias("dm"),
-        F.first("n_a").alias("n_a"),
-        F.first("n_r").alias("n_r"),
-    )
-    m6 = F.lit(1_000_000).cast("decimal(38,0)")
-    den = F.col("n_a") * F.col("n_r")
-    return dd.select(
-        F.col("n_a").cast("long").alias("n_a"),
-        F.col("n_r").cast("long").alias("n_r"),
-        halfup_div(m6 * F.col("dp"), den).cast("long").alias("d_plus_micro"),
-        halfup_div(m6 * F.col("dm"), den).cast("long").alias("d_minus_micro"),
-        halfup_div(m6 * (F.col("dp") + F.col("dm")), den)
-        .cast("long")
-        .alias("kuiper_v_micro"),
     )

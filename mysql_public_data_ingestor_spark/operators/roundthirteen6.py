@@ -22,6 +22,9 @@ design (the SCALE §5j.7 authoring rule):
 Reference parity note: the reference (Go ingestion pipeline,
 ``/root/reference/main.go``) has no analytics; these extend SURVEY
 §2.C warehouse statistics / text analysis / corpus management / dedup.
+
+``stats_goodman_kruskal_lambda`` and ``stats_goodman_kruskal_tau`` live
+in ``operators/stats_tables.py`` with the other stats queries.
 """
 
 from __future__ import annotations
@@ -32,218 +35,6 @@ from pyspark.sql import functions as F
 from ..functions.exact import dec38, halfup_div, sql_halfup_div
 from ..registry import register
 from ..tables import Tables
-
-# ---------------------------------------------------------------------------
-# shared: priority x status contingency grid (two consumers below)
-# ---------------------------------------------------------------------------
-
-_SQL_PS_GRID = """
-    grid AS (
-      SELECT o_orderpriority AS x, o_orderstatus AS y,
-             CAST(count(*) AS HUGEINT) AS n
-      FROM orders GROUP BY 1, 2
-    )
-"""
-
-
-def _ps_grid(t: Tables) -> DataFrame:
-    """(x=priority, y=status, n) — the bounded contingency grid both
-    PRE measures consume (SQL twin ``_SQL_PS_GRID``). Eagerly
-    localCheckpointed: the lambda op branches five grid-sized
-    aggregates off it and each would otherwise re-run the fact scan
-    (measured 4.3 s -> 1.7 s at sf0.1; the 20-row-grid pinning
-    discipline from the PAV decomposition)."""
-    return (
-        t.orders.groupBy(
-            F.col("o_orderpriority").alias("x"), F.col("o_orderstatus").alias("y")
-        )
-        .agg(dec38(F.count(F.lit(1))).alias("n"))
-        .localCheckpoint(eager=True)
-    )
-
-
-# ---------------------------------------------------------------------------
-# 1. Goodman-Kruskal lambda (modal PRE)
-# ---------------------------------------------------------------------------
-
-
-def _lambda_oracle() -> str:
-    hd = sql_halfup_div
-    return f"""
-    WITH {_SQL_PS_GRID.strip()}
-    , rowmax AS (
-      SELECT CAST(sum(mx) AS HUGEINT) AS sum_rowmax FROM (
-        SELECT x, max(n) AS mx FROM grid GROUP BY x)
-    ), colmax AS (
-      SELECT CAST(sum(mx) AS HUGEINT) AS sum_colmax FROM (
-        SELECT y, max(n) AS mx FROM grid GROUP BY y)
-    ), marg AS (
-      SELECT CAST(max(ny) AS HUGEINT) AS max_col,
-             (SELECT CAST(max(nx) AS HUGEINT) FROM (
-                SELECT x, sum(n) AS nx FROM grid GROUP BY x)) AS max_row,
-             (SELECT CAST(sum(n) AS HUGEINT) FROM grid) AS n
-      FROM (SELECT y, sum(n) AS ny FROM grid GROUP BY y)
-    )
-    SELECT CAST(m.n AS BIGINT) AS n,
-           CAST({hd('1000000::HUGEINT * (r.sum_rowmax - m.max_col)',
-                    'm.n - m.max_col')} AS BIGINT) AS lambda_y_given_x_micro,
-           CAST({hd('1000000::HUGEINT * (c.sum_colmax - m.max_row)',
-                    'm.n - m.max_row')} AS BIGINT) AS lambda_x_given_y_micro,
-           CAST({hd(
-               '1000000::HUGEINT * ((r.sum_rowmax + c.sum_colmax) - (m.max_col + m.max_row))',
-               '2 * m.n - (m.max_col + m.max_row)')} AS BIGINT)
-             AS lambda_symmetric_micro
-    FROM rowmax r, colmax c, marg m
-    """
-
-
-@register("stats_goodman_kruskal_lambda", oracle=_lambda_oracle())
-def stats_goodman_kruskal_lambda(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Goodman-Kruskal lambda for order priority x order status — the
-    modal proportional-reduction-in-error association (Goodman &
-    Kruskal 1954): how much better you predict the STATUS knowing the
-    priority than by always guessing the modal status (and the
-    transposed and symmetric versions). Gamma / Somers' D in the
-    family price ORDINAL concordance; lambda is the purely NOMINAL
-    PRE measure — zero exactly when every priority row has the same
-    modal status, regardless of how the probabilities differ off the
-    mode.
-
-    Exactness: lambda is a ratio of integer count differences
-    (sum of row maxima minus the modal column margin over N minus the
-    modal column margin) — pure int64/decimal arithmetic with ONE
-    half-up micro division per reported direction.
-
-    Scale shape: one fact scan partial-aggregates to the bounded
-    (5 priorities x |statuses|) grid; everything after is grid-sized
-    algebra. 1 row out.
-    """
-    t = Tables(spark, sf_dir)
-    grid = _ps_grid(t)
-    rowmax = grid.groupBy("x").agg(F.max("n").alias("mx")).agg(
-        F.sum("mx").alias("sum_rowmax")
-    )
-    colmax = grid.groupBy("y").agg(F.max("n").alias("mx")).agg(
-        F.sum("mx").alias("sum_colmax")
-    )
-    colmarg = grid.groupBy("y").agg(F.sum("n").alias("ny")).agg(
-        F.max("ny").alias("max_col")
-    )
-    rowmarg = grid.groupBy("x").agg(F.sum("n").alias("nx")).agg(
-        F.max("nx").alias("max_row")
-    )
-    tot = grid.agg(F.sum("n").alias("n"))
-    j = (
-        rowmax.crossJoin(F.broadcast(colmax))
-        .crossJoin(F.broadcast(colmarg))
-        .crossJoin(F.broadcast(rowmarg))
-        .crossJoin(F.broadcast(tot))
-    )
-    m6 = F.lit(1_000_000).cast("decimal(38,0)")
-    two = F.lit(2).cast("decimal(38,0)")
-    return j.select(
-        F.col("n").cast("long").alias("n"),
-        halfup_div(
-            m6 * (F.col("sum_rowmax") - F.col("max_col")),
-            F.col("n") - F.col("max_col"),
-        )
-        .cast("long")
-        .alias("lambda_y_given_x_micro"),
-        halfup_div(
-            m6 * (F.col("sum_colmax") - F.col("max_row")),
-            F.col("n") - F.col("max_row"),
-        )
-        .cast("long")
-        .alias("lambda_x_given_y_micro"),
-        halfup_div(
-            m6
-            * (
-                (F.col("sum_rowmax") + F.col("sum_colmax"))
-                - (F.col("max_col") + F.col("max_row"))
-            ),
-            two * F.col("n") - (F.col("max_col") + F.col("max_row")),
-        )
-        .cast("long")
-        .alias("lambda_symmetric_micro"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# 2. Goodman-Kruskal tau (variance PRE)
-# ---------------------------------------------------------------------------
-
-
-def _gk_tau_oracle() -> str:
-    hd = sql_halfup_div
-    return f"""
-    WITH {_SQL_PS_GRID.strip()}
-    , rows_ AS (
-      SELECT x, CAST(sum(n) AS HUGEINT) AS nx,
-             CAST(sum(n * n) AS HUGEINT) AS a_x
-      FROM grid GROUP BY x
-    ), tot AS (
-      SELECT CAST(sum(nx) AS HUGEINT) AS n FROM rows_
-    ), cols AS (
-      SELECT CAST(sum(ny * ny) AS HUGEINT) AS b FROM (
-        SELECT y, CAST(sum(n) AS HUGEINT) AS ny FROM grid GROUP BY y)
-    ), terms AS (
-      SELECT CAST(sum({hd('1000000::HUGEINT * t.n * r.a_x', 'r.nx')})
-                  AS HUGEINT) AS num_t
-      FROM rows_ r, tot t
-    )
-    SELECT CAST(t.n AS BIGINT) AS n,
-           CAST({hd('(tm.num_t - 1000000::HUGEINT * c.b)',
-                    '(t.n * t.n - c.b)')} AS BIGINT) AS gk_tau_micro
-    FROM tot t, cols c, terms tm
-    """
-
-
-@register("stats_goodman_kruskal_tau", oracle=_gk_tau_oracle())
-def stats_goodman_kruskal_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Goodman-Kruskal tau for order status given order priority — the
-    variance-based PRE sibling of lambda: the proportional reduction
-    in Gini concentration of the status distribution when the priority
-    is known, tau = (N * sum_x (sum_y n_xy^2)/n_x - sum_y n_y^2) /
-    (N^2 - sum_y n_y^2). Lambda only sees the MODE move; tau responds
-    to any probability shift (the reason it's the default nominal PRE
-    in categorical data analysis texts, e.g. Agresti §2.4).
-
-    Exactness: the per-row-category term N * A_x / n_x quantizes
-    half-up at micro once (exact integer A_x = sum of squared cell
-    counts), the quantized terms sum as integers, and ONE final
-    half-up division produces the micro statistic — deterministic in
-    any partitioning/order.
-
-    Scale shape: identical to lambda — one partial-aggregated scan to
-    the bounded grid, grid-sized algebra, 1 row out. Headroom: the
-    per-term numerator 1e6 * N * A_x <= 1e6 * N * n_x^2 ~ 1e6 * N^3
-    peaks ~1e30 at 1e8-row grids cells — inside decimal(38,0).
-    """
-    t = Tables(spark, sf_dir)
-    grid = _ps_grid(t)
-    rows_ = grid.groupBy("x").agg(
-        F.sum("n").alias("nx"), F.sum(F.col("n") * F.col("n")).alias("a_x")
-    )
-    tot = rows_.agg(F.sum("nx").alias("n"))
-    cols = (
-        grid.groupBy("y")
-        .agg(F.sum("n").alias("ny"))
-        .agg(F.sum(F.col("ny") * F.col("ny")).alias("b"))
-    )
-    m6 = F.lit(1_000_000).cast("decimal(38,0)")
-    terms = rows_.crossJoin(F.broadcast(tot)).select(
-        halfup_div(m6 * F.col("n") * F.col("a_x"), F.col("nx")).alias("t_x")
-    ).agg(F.sum("t_x").alias("num_t"))
-    j = tot.crossJoin(F.broadcast(cols)).crossJoin(F.broadcast(terms))
-    return j.select(
-        F.col("n").cast("long").alias("n"),
-        halfup_div(
-            F.col("num_t") - m6 * F.col("b"),
-            F.col("n") * F.col("n") - F.col("b"),
-        )
-        .cast("long")
-        .alias("gk_tau_micro"),
-    )
 
 
 # ---------------------------------------------------------------------------

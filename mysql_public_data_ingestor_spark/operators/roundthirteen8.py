@@ -20,6 +20,9 @@ inventory before design (the SCALE §5j.7 authoring rule):
 Reference parity note: the reference (Go ingestion pipeline,
 ``/root/reference/main.go``) has no analytics; these extend SURVEY
 §2.C warehouse statistics / graph / ML / embedding / time-series.
+
+``stats_circular_weekday_concentration`` lives in
+``operators/stats_dist.py`` with the other stats queries.
 """
 
 from __future__ import annotations
@@ -30,102 +33,6 @@ from pyspark.sql import functions as F
 from ..functions.exact import dec38, halfup_div, sql_halfup_div
 from ..registry import register
 from ..tables import Tables
-
-# ---------------------------------------------------------------------------
-# 1. Circular concentration of the order weekday distribution
-# ---------------------------------------------------------------------------
-
-# 1e6-quantized cos/sin(2*pi*(dow-1)/7) for ISO dow 1..7 — fixed
-# literals shared verbatim by both engines; re-derived independently
-# in tests/test_roundthirteen8.py (the SCALE §5n anchor rule).
-COS7_MICRO = {1: 1000000, 2: 623490, 3: -222521, 4: -900969,
-              5: -900969, 6: -222521, 7: 623490}
-SIN7_MICRO = {1: 0, 2: 781831, 3: 974928, 4: 433884,
-              5: -433884, 6: -974928, 7: -781831}
-
-
-def _circular_oracle() -> str:
-    hd = sql_halfup_div
-    cosc = " ".join(f"WHEN {d} THEN {c}" for d, c in sorted(COS7_MICRO.items()))
-    sinc = " ".join(f"WHEN {d} THEN {c}" for d, c in sorted(SIN7_MICRO.items()))
-    return f"""
-    WITH dw AS (
-      SELECT CAST(isodow(CAST(o_orderdate AS DATE)) AS BIGINT) AS dow,
-             CAST(count(*) AS HUGEINT) AS n_d
-      FROM orders GROUP BY 1
-    ), s AS (
-      SELECT CAST(sum(n_d) AS HUGEINT) AS n,
-             CAST(sum(n_d * (CASE dow {cosc} END)) AS HUGEINT) AS c,
-             CAST(sum(n_d * (CASE dow {sinc} END)) AS HUGEINT) AS sn,
-             (SELECT dow FROM dw ORDER BY n_d DESC, dow ASC LIMIT 1)
-               AS modal_dow
-      FROM dw
-    )
-    SELECT CAST(n AS BIGINT) AS n, CAST(modal_dow AS BIGINT) AS modal_dow,
-           CAST({hd('1000000::HUGEINT * (c * c + sn * sn)',
-                    'n * n * 1000000000000::HUGEINT')} AS BIGINT)
-             AS rbar_sq_micro,
-           CAST({hd('1000::HUGEINT * (c * c + sn * sn)',
-                    'n * 1000000000000::HUGEINT')} AS BIGINT)
-             AS rayleigh_z_milli
-    FROM s
-    """
-
-
-@register("stats_circular_weekday_concentration", oracle=_circular_oracle())
-def stats_circular_weekday_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Circular concentration of order placement around the week:
-    treat ISO weekday d as the angle 2 pi (d-1)/7 and report the
-    squared mean resultant length Rbar^2 = (C^2 + S^2) / N^2 (Fisher,
-    Statistical Analysis of Circular Data) and the Rayleigh statistic
-    z = N Rbar^2 — the uniformity test that respects the week's
-    WRAPAROUND (a chi-square sees Mon..Sun as unordered categories;
-    the circular statistic knows Sunday neighbors Monday, so a
-    weekend hump concentrates mass in one arc and lights up z).
-    Squared form keeps exact rational arithmetic (the Guiraud/Cpk
-    convention); the modal weekday rides along.
-
-    Exactness: C = sum n_d cos_q, S = sum n_d sin_q over the 7-cell
-    weekday table with 1e6-quantized trig LITERALS (constant-anchored
-    against an independent re-derivation) — pure integers; one
-    half-up division each for Rbar^2 (micro) and z (milli). Headroom:
-    C^2 peaks ~ (N * 1e6)^2 = 1e36 at 1e12 rows — inside
-    decimal(38,0)/HUGEINT (documented bound).
-
-    Scale shape: one fact scan partial-aggregates to 7 weekday cells;
-    1 row out.
-    """
-    t = Tables(spark, sf_dir)
-    cosc = F.create_map(
-        *[F.lit(x) for kv in sorted(COS7_MICRO.items()) for x in kv]
-    )
-    sinc = F.create_map(
-        *[F.lit(x) for kv in sorted(SIN7_MICRO.items()) for x in kv]
-    )
-    dow = (F.weekday(F.to_date("o_orderdate")) + 1).cast("long")
-    dw = t.orders.select(dow.alias("dow")).groupBy("dow").agg(
-        dec38(F.count(F.lit(1))).alias("n_d")
-    )
-    s = dw.agg(
-        F.sum("n_d").alias("n"),
-        F.sum(F.col("n_d") * dec38(cosc[F.col("dow")])).alias("c"),
-        F.sum(F.col("n_d") * dec38(sinc[F.col("dow")])).alias("sn"),
-        F.min_by("dow", F.struct((-F.col("n_d")).alias("a"), F.col("dow").alias("b")))
-        .alias("modal_dow"),
-    )
-    m6 = F.lit(1_000_000).cast("decimal(38,0)")
-    t12 = F.lit(10**12).cast("decimal(38,0)")
-    r2 = F.col("c") * F.col("c") + F.col("sn") * F.col("sn")
-    return s.select(
-        F.col("n").cast("long").alias("n"),
-        F.col("modal_dow").cast("long").alias("modal_dow"),
-        halfup_div(m6 * r2, F.col("n") * F.col("n") * t12)
-        .cast("long")
-        .alias("rbar_sq_micro"),
-        halfup_div(F.lit(1000).cast("decimal(38,0)") * r2, F.col("n") * t12)
-        .cast("long")
-        .alias("rayleigh_z_milli"),
-    )
 
 
 # ---------------------------------------------------------------------------

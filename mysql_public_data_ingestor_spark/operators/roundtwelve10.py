@@ -24,6 +24,9 @@ before design (the SCALE §5j.7 authoring rule):
 Reference parity note: the reference (Go ingestion pipeline,
 ``/root/reference/main.go``) has no analytics; these extend SURVEY
 §2.C privacy / layout / embedding / statistics.
+
+``stats_lin_ccc_reconciliation`` lives in ``operators/stats_tables.py``
+with the other stats queries.
 """
 
 from __future__ import annotations
@@ -512,107 +515,4 @@ def embedding_knn_hubness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .cast("long")
         .alias("k_occ_var_micro"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# 4. Lin's concordance between header total and line-derived total
-# ---------------------------------------------------------------------------
-
-
-def _ccc_oracle() -> str:
-    hd = sql_halfup_div
-    return f"""
-    WITH lx AS (
-      SELECT l_orderkey,
-             CAST(sum(CAST(floor(l_extendedprice * (1 - l_discount)
-                                 * (1 + l_tax) * 100.0 + 0.5) AS BIGINT))
-                  AS HUGEINT) AS y
-      FROM lineitem GROUP BY l_orderkey
-    ), pairs AS (
-      SELECT CAST(floor(o.o_totalprice * 100.0 + 0.5) AS HUGEINT) AS x, lx.y
-      FROM orders o JOIN lx ON lx.l_orderkey = o.o_orderkey
-    ), s AS (
-      SELECT CAST(count(*) AS HUGEINT) AS n,
-             CAST(sum(x) AS HUGEINT) AS sx, CAST(sum(y) AS HUGEINT) AS sy,
-             CAST(sum(x * x) AS HUGEINT) AS sxx,
-             CAST(sum(y * y) AS HUGEINT) AS syy,
-             CAST(sum(x * y) AS HUGEINT) AS sxy
-      FROM pairs
-    )
-    SELECT CAST(n AS BIGINT) AS n_orders,
-           CAST(sx AS BIGINT) AS sum_header_cents,
-           CAST(sy AS BIGINT) AS sum_lines_cents,
-           CASE WHEN (n * sxx - sx * sx) + (n * syy - sy * sy)
-                     + (sx - sy) * (sx - sy) > 0 THEN
-             CAST({hd('1000000::HUGEINT * 2 * (n * sxy - sx * sy)',
-                      '(n * sxx - sx * sx) + (n * syy - sy * sy)'
-                      ' + (sx - sy) * (sx - sy)')} AS BIGINT)
-           END AS ccc_micro
-    FROM s
-    """
-
-
-@register("stats_lin_ccc_reconciliation", oracle=_ccc_oracle())
-def stats_lin_ccc_reconciliation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Lin's concordance correlation coefficient (1989) between the
-    order HEADER total and the LINE-DERIVED total (sum of
-    extendedprice * (1-discount) * (1+tax) per order): CCC = 2 s_xy /
-    (s_x^2 + s_y^2 + (mean_x - mean_y)^2) measures agreement with the
-    45-degree line, penalizing BOTH scatter and systematic bias.
-    ``dq_order_lineitem_reconciliation`` counts mismatching orders;
-    CCC is the agreement COEFFICIENT a data-contract dashboard trends
-    (a CCC drifting from 1 flags creeping formula drift even while
-    the mismatch count stays noisy) — the method-comparison statistic
-    of clinical chemistry applied to warehouse reconciliation.
-
-    Exactness: both totals quantize to cents once (floor(x*100+0.5),
-    the identical double sequence on both engines); all five
-    sufficient sums are exact integers; clearing n^2 gives CCC =
-    2(n Sxy - Sx Sy) / ((n Sxx - Sx^2) + (n Syy - Sy^2) + (Sx-Sy)^2)
-    — ONE half-up micro division, NULL-guarded degenerate.
-
-    Scale shape: one lineitem scan grouped by orderkey, one orders
-    scan, one co-keyed equi-join, one sufficient-sum aggregate.
-    """
-    t = Tables(spark, sf_dir)
-    lx = t.lineitem.groupBy("l_orderkey").agg(
-        F.sum(
-            F.floor(
-                F.col("l_extendedprice")
-                * (1 - F.col("l_discount"))
-                * (1 + F.col("l_tax"))
-                * 100.0
-                + 0.5
-            ).cast("long")
-        ).alias("y")
-    )
-    pairs = t.orders.select(
-        F.col("o_orderkey").alias("l_orderkey"),
-        F.floor(F.col("o_totalprice") * 100.0 + 0.5).cast("long").alias("x"),
-    ).join(lx, "l_orderkey")
-    s = pairs.agg(
-        dec38(F.count(F.lit(1))).alias("n"),
-        dec38(F.sum("x")).alias("sx"),
-        dec38(F.sum("y")).alias("sy"),
-        F.sum(dec38(F.col("x")) * F.col("x")).alias("sxx"),
-        F.sum(dec38(F.col("y")) * F.col("y")).alias("syy"),
-        F.sum(dec38(F.col("x")) * F.col("y")).alias("sxy"),
-    )
-    m6 = F.lit(1_000_000).cast("decimal(38,0)")
-    vx = F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
-    vy = F.col("n") * F.col("syy") - F.col("sy") * F.col("sy")
-    bias = (F.col("sx") - F.col("sy")) * (F.col("sx") - F.col("sy"))
-    den = vx + vy + bias
-    return s.select(
-        F.col("n").cast("long").alias("n_orders"),
-        F.col("sx").cast("long").alias("sum_header_cents"),
-        F.col("sy").cast("long").alias("sum_lines_cents"),
-        F.when(
-            den > 0,
-            halfup_div(
-                m6 * 2 * (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")),
-                den,
-            ).cast("long"),
-        ).alias("ccc_micro"),
     )

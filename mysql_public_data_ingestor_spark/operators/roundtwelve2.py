@@ -18,6 +18,9 @@ the inventory check is now part of the authoring rule.)
 Reference parity note: the reference (Go ingestion pipeline,
 ``/root/reference/main.go``) has no analytics; these extend SURVEY
 §2.C warehouse statistics / graph analytics / LM-scoring audits.
+
+``stats_cochran_armitage_trend`` lives in ``operators/stats_tables.py``
+with the other stats queries.
 """
 
 from __future__ import annotations
@@ -25,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.exact import dec38, halfup_div, sql_halfup_div
+from ..functions.exact import dec38, halfup_div, order_cents, sql_halfup_div
 from ..registry import register
 from ..tables import Tables
 
@@ -122,117 +125,6 @@ def corpus_mi_lang_length(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# 3. Cochran–Armitage trend test: order status across ordered priorities
-# ---------------------------------------------------------------------------
-
-
-def _armitage_oracle() -> str:
-    hd = sql_halfup_div
-    return f"""
-    WITH lab AS (
-      SELECT CAST(substr(o_orderpriority, 1, 1) AS BIGINT) AS j,
-             CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END AS pos
-      FROM orders
-    ), cells AS (
-      SELECT j, CAST(count(*) AS HUGEINT) AS n_j,
-             CAST(sum(pos) AS HUGEINT) AS r_j
-      FROM lab GROUP BY j
-    ), tot AS (
-      SELECT CAST(sum(n_j) AS HUGEINT) AS n,
-             CAST(sum(r_j) AS HUGEINT) AS r,
-             CAST(sum(j * n_j) AS HUGEINT) AS sns,
-             CAST(sum(j * j * n_j) AS HUGEINT) AS snss
-      FROM cells
-    ), tstat AS (
-      SELECT t.n, t.r,
-             (SELECT sum(c.j * (t.n * c.r_j - c.n_j * t.r)) FROM cells c) AS tn,
-             (t.r * (t.n - t.r) * (t.n * t.snss - t.sns * t.sns)) AS var_s
-      FROM tot t
-    )
-    SELECT c.j, CAST(c.n_j AS BIGINT) AS n_orders, CAST(c.r_j AS BIGINT) AS n_pos,
-           CAST({hd('1000000::HUGEINT * c.r_j', 'c.n_j')} AS BIGINT)
-             AS p_hat_micro,
-           CASE WHEN t.var_s > 0 THEN
-             CAST({hd('1000000::HUGEINT * t.tn * t.tn * t.n', 't.var_s')} AS BIGINT)
-               * (CASE WHEN t.tn < 0 THEN -1 ELSE 1 END)
-           END AS trend_z_sq_signed_micro
-    FROM cells c, tstat t ORDER BY c.j
-    """
-
-
-@register("stats_cochran_armitage_trend", _armitage_oracle())
-def stats_cochran_armitage_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cochran–Armitage trend test: does the proportion of finished
-    ('F') orders TREND monotonically across the five ordered priority
-    levels? The chi-square independence family
-    (``stats_chi_square_lang_source``, ``stats_g_test_dow_type``)
-    spends its df on ANY deviation; this test spends ONE df on the
-    ordered alternative — far more powerful when the question is "does
-    urgency change the outcome RATE monotonically", the same reason
-    ``stats_jonckheere_terpstra_priority`` exists for continuous
-    outcomes (this is its binary-outcome sibling).
-
-    Exactness: T*N = sum_j j (N r_j - n_j R) and Var*N^3 =
-    R(N-R)(N sum n j^2 - (sum n j)^2) are exact integers; the signed
-    squared statistic Z^2 = (TN)^2 N / Var*N^3-scaled is ONE half-up
-    1e-6 division, sign carried from T (positive = completion rate
-    rises toward LOW priority numbers... i.e. with j).
-
-    Scale shape: one fact scan partial-aggregating to 5 (priority)
-    cells; everything after is 5-row algebra.
-    """
-    t = Tables(spark, sf_dir)
-    lab = t.orders.select(
-        F.substring("o_orderpriority", 1, 1).cast("long").alias("j"),
-        F.when(F.col("o_orderstatus") == "F", 1).otherwise(0).alias("pos"),
-    )
-    cells = lab.groupBy("j").agg(
-        dec38(F.count(F.lit(1))).alias("n_j"), dec38(F.sum("pos")).alias("r_j")
-    )
-    tot = cells.agg(
-        F.sum("n_j").alias("n"),
-        F.sum("r_j").alias("r"),
-        F.sum(dec38(F.col("j")) * F.col("n_j")).alias("sns"),
-        F.sum(dec38(F.col("j")) * F.col("j") * F.col("n_j")).alias("snss"),
-    )
-    tn_parts = cells.crossJoin(F.broadcast(tot)).agg(
-        F.sum(
-            dec38(F.col("j")) * (F.col("n") * F.col("r_j") - F.col("n_j") * F.col("r"))
-        ).alias("tn")
-    )
-    m6 = F.lit(1_000_000).cast("decimal(38,0)")
-    stat = (
-        tot.crossJoin(F.broadcast(tn_parts))
-        .select(
-            "tn",
-            (
-                F.col("r")
-                * (F.col("n") - F.col("r"))
-                * (F.col("n") * F.col("snss") - F.col("sns") * F.col("sns"))
-            ).alias("var_s"),
-            "n",
-        )
-    )
-    return (
-        cells.crossJoin(F.broadcast(stat))
-        .select(
-            "j",
-            F.col("n_j").cast("long").alias("n_orders"),
-            F.col("r_j").cast("long").alias("n_pos"),
-            halfup_div(m6 * F.col("r_j"), F.col("n_j")).cast("long").alias("p_hat_micro"),
-            F.when(
-                F.col("var_s") > 0,
-                halfup_div(m6 * F.col("tn") * F.col("tn") * F.col("n"), F.col("var_s"))
-                * F.when(F.col("tn") < 0, F.lit(-1)).otherwise(F.lit(1)),
-            )
-            .cast("long")
-            .alias("trend_z_sq_signed_micro"),
-        )
-        .orderBy("j")
-    )
-
-
-# ---------------------------------------------------------------------------
 # 4. Min/max data-skipping effectiveness audit over month partitions
 # ---------------------------------------------------------------------------
 
@@ -302,7 +194,7 @@ def layout_minmax_skipping_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-scan per threshold); the 5-row curve is bounded-table algebra.
     """
     t = Tables(spark, sf_dir)
-    cents = F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")
+    cents = order_cents()
     rows_ = t.orders.select(
         (F.year("o_orderdate") * 100 + F.month("o_orderdate")).cast("long").alias("part"),
         cents.alias("c"),

@@ -14,6 +14,9 @@ registry inventory before design (the §5j.7 authoring rule).
 Reference parity note: the reference (Go ingestion pipeline) has no
 analytics; these extend SURVEY §2.C warehouse statistics / dedup /
 graph analytics / privacy.
+
+``stats_dunn_posthoc_quantity`` lives in ``operators/stats_rank.py``
+with the other stats queries.
 """
 
 from __future__ import annotations
@@ -24,202 +27,6 @@ from pyspark.sql import functions as F
 from ..functions.exact import dec38, halfup_div, sql_halfup_div
 from ..registry import register
 from ..tables import Tables
-
-# ---------------------------------------------------------------------------
-# 1. Dunn nonparametric post-hoc pairwise test (return-flag groups)
-# ---------------------------------------------------------------------------
-
-
-# Shared CTE chain up to the per-pair table (g_i, g_j, n_i, n_j, a_ij,
-# n, cnum) — consumed by BOTH the Dunn oracle below and the Holm
-# step-down oracle in roundtwelve6.py (one derivation, two tests: the
-# r10 twin-sided-bug rule).
-_DUNN_PAIR_CTES = """
-    q AS (
-      SELECT l_returnflag AS g, CAST(l_quantity AS BIGINT) AS v
-      FROM lineitem WHERE l_quantity IS NOT NULL
-    ), dv AS (
-      SELECT v, CAST(count(*) AS BIGINT) AS cnt FROM q GROUP BY v
-    ), r AS (
-      SELECT v, cnt,
-             coalesce(sum(cnt) OVER (ORDER BY v
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cum
-      FROM dv
-    ), gv AS (
-      SELECT g, v, CAST(count(*) AS BIGINT) AS cnt_g FROM q GROUP BY g, v
-    ), rg AS (
-      SELECT gv.g,
-             CAST(sum(gv.cnt_g) AS HUGEINT) AS n_g,
-             CAST(sum(gv.cnt_g::HUGEINT * (2 * r.cum + r.cnt + 1)) AS HUGEINT)
-               AS r2_g
-      FROM gv JOIN r ON gv.v = r.v GROUP BY gv.g
-    ), nt AS (
-      SELECT CAST(sum(n_g) AS HUGEINT) AS n,
-             (SELECT CAST(sum(cnt::HUGEINT * cnt * cnt - cnt) AS HUGEINT)
-              FROM dv) AS tie3
-      FROM rg
-    ), cn AS (
-      SELECT n, (n * (n + 1) * (n - 1) - tie3) AS cnum FROM nt
-    ), pairs AS (
-      SELECT a.g AS g_i, b.g AS g_j, a.n_g AS n_i, b.n_g AS n_j,
-             (a.r2_g * b.n_g - b.r2_g * a.n_g) AS a_ij,
-             c.n, c.cnum
-      FROM rg a JOIN rg b ON a.g < b.g, cn c
-    )
-"""
-
-# z^2 in shape-matched IEEE double (the KW-oracle precedent: *, / are
-# correctly rounded identically in both engines; the exact-integer A^2
-# path overflows decimal(38,0) at x10) — shared with roundtwelve6.
-_SQL_DUNN_Z2 = """CAST(floor(
-             ((((3.0 * CAST(n - 1 AS DOUBLE)) * CAST(a_ij AS DOUBLE))
-               * CAST(a_ij AS DOUBLE)) * 1000000.0)
-             / CAST(n_i * n_j AS DOUBLE)
-             / CAST(n_i + n_j AS DOUBLE)
-             / CAST(cnum AS DOUBLE) + 0.5) AS BIGINT)
-             * (CASE WHEN a_ij < 0 THEN -1 ELSE 1 END)"""
-
-
-def _dunn_oracle() -> str:
-    hd = sql_halfup_div
-    return f"""
-    WITH {_DUNN_PAIR_CTES}
-    SELECT g_i, g_j, CAST(n_i AS BIGINT) AS n_i, CAST(n_j AS BIGINT) AS n_j,
-           CAST({hd('1000000::HUGEINT * a_ij', '2 * n_i * n_j')} AS BIGINT)
-             AS rank_diff_micro,
-           {_SQL_DUNN_Z2}
-             AS dunn_z_sq_signed_micro
-    FROM pairs ORDER BY g_i, g_j
-    """
-
-
-def _dunn_pairs(t: Tables) -> DataFrame:
-    """Per-pair table (g_i, g_j, n_i, n_j, a_ij, n, cnum) of the Dunn
-    derivation — 2x-midrank sums on the <= 50-value quantity grid, the
-    exact pair numerator A_ij and the tie-corrected variance core.
-    Shared by ``stats_dunn_posthoc_quantity`` and the Holm step-down
-    wrapper in roundtwelve6.py (one derivation, two consumers)."""
-    from pyspark.sql.window import Window
-
-    q = t.lineitem.filter(F.col("l_quantity").isNotNull()).select(
-        F.col("l_returnflag").alias("g"), F.col("l_quantity").cast("long").alias("v")
-    )
-    dv = q.groupBy("v").agg(F.count(F.lit(1)).alias("cnt"))
-    w = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, -1)
-    r = dv.select(
-        "v", "cnt", F.coalesce(F.sum("cnt").over(w), F.lit(0)).alias("cum")
-    )
-    gv = q.groupBy("g", "v").agg(F.count(F.lit(1)).alias("cnt_g"))
-    rg = (
-        gv.join(F.broadcast(r), "v")
-        .groupBy("g")
-        .agg(
-            dec38(F.sum("cnt_g")).alias("n_g"),
-            F.sum(
-                dec38(F.col("cnt_g")) * (2 * F.col("cum") + F.col("cnt") + 1)
-            ).alias("r2_g"),
-        )
-    )
-    tie3 = dv.agg(
-        F.sum(
-            dec38(F.col("cnt")) * F.col("cnt") * F.col("cnt") - dec38(F.col("cnt"))
-        ).alias("tie3")
-    )
-    cn = (
-        rg.agg(F.sum("n_g").alias("n"))
-        .crossJoin(F.broadcast(tie3))
-        .select(
-            "n",
-            (F.col("n") * (F.col("n") + 1) * (F.col("n") - 1) - F.col("tie3")).alias(
-                "cnum"
-            ),
-        )
-    )
-    b = rg.select(
-        F.col("g").alias("g_j"), F.col("n_g").alias("n_j"), F.col("r2_g").alias("r2_j")
-    )
-    pairs = (
-        rg.select(
-            F.col("g").alias("g_i"), F.col("n_g").alias("n_i"), F.col("r2_g").alias("r2_i")
-        )
-        .join(F.broadcast(b), F.col("g_i") < F.col("g_j"))
-        .crossJoin(F.broadcast(cn))
-        .select(
-            "g_i",
-            "g_j",
-            "n_i",
-            "n_j",
-            (F.col("r2_i") * F.col("n_j") - F.col("r2_j") * F.col("n_i")).alias("a_ij"),
-            "n",
-            "cnum",
-        )
-    )
-    return pairs
-
-
-def _dunn_z2_unsigned():
-    """Unsigned z^2 micro column over a ``_dunn_pairs`` row, in the
-    shape-matched IEEE double sequence twinned by ``_SQL_DUNN_Z2``."""
-    ad = F.col("a_ij").cast("double")
-    return F.floor(
-        (((F.lit(3.0) * (F.col("n") - 1).cast("double")) * ad) * ad * F.lit(1000000.0))
-        / (F.col("n_i") * F.col("n_j")).cast("double")
-        / (F.col("n_i") + F.col("n_j")).cast("double")
-        / F.col("cnum").cast("double")
-        + F.lit(0.5)
-    ).cast("long")
-
-
-@register("stats_dunn_posthoc_quantity", _dunn_oracle())
-def stats_dunn_posthoc_quantity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Dunn post-hoc pairwise rank test behind
-    ``stats_kruskal_wallis_quantity``: once KW rejects "all return-flag
-    groups share a quantity distribution", Dunn says WHICH pairs differ
-    — mean-rank difference per pair with the tie-corrected z statistic
-    (signed square, the convention that avoids square roots). The
-    nonparametric sibling of ``stats_tukey_hsd_priority`` (parametric
-    post-hoc), sharing KW's bounded-grid rank machinery.
-
-    Exactness: rank sums run in exact 2x-midrank units on the <= 50-row
-    quantity grid (the KW convention); A_ij = r2_i n_j - r2_j n_i and
-    the tie-corrected variance core Cn = N(N+1)(N-1) - sum(t^3 - t)
-    are exact integers; z^2 = 3(N-1) A^2 / (n_i n_j (n_i+n_j) Cn) is
-    evaluated in SHAPE-MATCHED IEEE double (the Kruskal-Wallis oracle
-    precedent: double *, / are correctly rounded, so two engines
-    evaluating the identical expression tree produce the identical
-    bits; the exact-integer 1e6 A^2 numerator overflows decimal(38,0)
-    at the x10 replica scale, and no integer staging balances the
-    factor magnitudes) — the replica re-runs the same double sequence
-    AND anchors against the textbook float formula.
-
-    Scale shape: one scan to the (group x quantity-value) grid; the
-    midrank cumulative is a window over <= 50 DISTINCT VALUES (domain-
-    bounded, never row-scaled); pairs are a 3-row self-join.
-    """
-    t = Tables(spark, sf_dir)
-    pairs = _dunn_pairs(t)
-    # Cross-engine contract (ADVICE r11): a_ij is an exact integer that
-    # can exceed 2^53 at x10 replica scale, so Spark's decimal->double
-    # and DuckDB's HUGEINT->double casts must round identically. Both
-    # engines use IEEE-754 round-to-nearest-even for integer->double
-    # conversion (same precedent as the Kruskal-Wallis H path); the x10
-    # replica in tests/test_roundtwelve3.py anchors this — if either
-    # engine ever changes conversion rounding, that parity test is the
-    # tripwire.
-    z2 = _dunn_z2_unsigned()
-    m6 = F.lit(1_000_000).cast("decimal(38,0)")
-    return pairs.select(
-        "g_i",
-        "g_j",
-        F.col("n_i").cast("long").alias("n_i"),
-        F.col("n_j").cast("long").alias("n_j"),
-        halfup_div(m6 * F.col("a_ij"), 2 * F.col("n_i") * F.col("n_j"))
-        .cast("long")
-        .alias("rank_diff_micro"),
-        (z2 * F.when(F.col("a_ij") < 0, F.lit(-1)).otherwise(F.lit(1)))
-        .cast("long")
-        .alias("dunn_z_sq_signed_micro"),
-    ).orderBy("g_i", "g_j")
 
 
 # ---------------------------------------------------------------------------

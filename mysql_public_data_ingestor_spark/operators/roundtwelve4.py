@@ -21,6 +21,9 @@ management / ML governance.
 
 ``stats_cochrane_orcutt_trend`` lives in
 ``operators/daily_hypothesis.py`` with the other daily-series queries.
+
+``stats_eb_beta_binomial_shrinkage`` lives in
+``operators/stats_tables.py`` with the other stats queries.
 """
 
 from __future__ import annotations
@@ -31,195 +34,6 @@ from pyspark.sql import functions as F
 from ..functions.exact import dec38, halfup_div, sql_halfup_div
 from ..registry import register
 from ..tables import Tables
-
-# ---------------------------------------------------------------------------
-# 1. Empirical-Bayes beta-binomial shrinkage of per-nation rates
-# ---------------------------------------------------------------------------
-
-
-def _eb_oracle() -> str:
-    hd = sql_halfup_div
-    return f"""
-    WITH rates AS (
-      SELECT n.n_name AS nation,
-             CAST(count(*) AS HUGEINT) AS n_orders,
-             CAST(sum(CASE WHEN o.o_orderstatus = 'F' THEN 1 ELSE 0 END)
-                  AS HUGEINT) AS k_pos
-      FROM orders o
-      JOIN customer c ON c.c_custkey = o.o_custkey
-      JOIN nation n ON n.n_nationkey = c.c_nationkey
-      GROUP BY n.n_name
-    ), pm AS (
-      SELECT nation, n_orders, k_pos,
-             {hd('1000000::HUGEINT * k_pos', 'n_orders')} AS p_micro
-      FROM rates
-    ), gstats AS (
-      SELECT CAST(count(*) AS HUGEINT) AS g,
-             CAST(sum(p_micro) AS HUGEINT) AS sp,
-             CAST(sum({hd('1000000000::HUGEINT', 'n_orders')}) AS HUGEINT)
-               AS s_inv_nano
-      FROM pm
-    ), pbar AS (
-      SELECT g, s_inv_nano, {hd('sp', 'g')} AS pbar_micro FROM gstats
-    ), s2 AS (
-      SELECT pb.g, pb.pbar_micro, pb.s_inv_nano,
-             {hd('CAST((SELECT sum((p_micro - pb.pbar_micro)'
-                 ' * (p_micro - pb.pbar_micro)) FROM pm) AS HUGEINT)',
-                 'pb.g - 1')} AS s2_pico,
-             {hd('pb.s_inv_nano', 'pb.g')} AS mean_inv_nano
-      FROM pbar pb
-    ), mo AS (
-      SELECT g, pbar_micro,
-             s2_pico,
-             {hd('pbar_micro * (1000000 - pbar_micro) * mean_inv_nano',
-                 '1000000000::HUGEINT')} AS vw_pico
-      FROM s2
-    ), m AS (
-      SELECT g, pbar_micro, s2_pico, vw_pico,
-             CASE WHEN s2_pico - vw_pico > 0 THEN
-               greatest({hd('1000::HUGEINT * pbar_micro * (1000000 - pbar_micro)',
-                            's2_pico - vw_pico')} - 1000, 0)
-             END AS m_milli
-      FROM mo
-    )
-    SELECT r.nation, CAST(r.n_orders AS BIGINT) AS n_orders,
-           CAST(r.k_pos AS BIGINT) AS n_pos,
-           CAST(p.p_micro AS BIGINT) AS raw_micro,
-           CAST(m.m_milli AS BIGINT) AS prior_strength_milli,
-           CAST(CASE WHEN m.m_milli IS NULL THEN m.pbar_micro ELSE
-             {hd('1000000000::HUGEINT * r.k_pos + m.m_milli * m.pbar_micro',
-                 '1000::HUGEINT * r.n_orders + m.m_milli')}
-           END AS BIGINT) AS shrunk_micro,
-           CAST(CASE WHEN m.m_milli IS NULL THEN 1000 ELSE
-             {hd('1000::HUGEINT * m.m_milli',
-                 '1000::HUGEINT * r.n_orders + m.m_milli')}
-           END AS BIGINT) AS prior_weight_milli
-    FROM rates r JOIN pm p ON p.nation = r.nation, m
-    ORDER BY r.nation
-    """
-
-
-@register("stats_eb_beta_binomial_shrinkage", _eb_oracle())
-def stats_eb_beta_binomial_shrinkage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Empirical-Bayes shrinkage of per-nation order-completion rates:
-    method-of-moments beta-binomial prior (strength M = p(1-p)/tau^2
-    - 1 pseudo-observations of the global rate, tau^2 the between-
-    nation variance in excess of binomial sampling noise), then
-    shrunk_i = (k_i + M pbar)/(n_i + M). THE standard fix for
-    small-sample league tables — raw per-segment rates over-disperse
-    and the smallest segments dominate both tails
-    (``stats_wilson_ci_by_nation`` widens intervals; this moves the
-    ESTIMATE, which is what a ranking or alert threshold consumes).
-    When tau^2 <= 0 (no evidence of real between-nation variation)
-    the estimator degenerates to the global rate, reported as NULL
-    prior strength + full prior weight.
-
-    Exactness: the whole MoM chain runs in staged fixed-point integers
-    (rates micro, variances pico, inverse sizes nano, M milli) — every
-    step one half-up division of exact integers, identical on both
-    engines; the replica re-runs the integer chain AND anchors against
-    the float MoM formulas.
-
-    Scale shape: one orders scan with two broadcast dimension joins to
-    25 nation cells; the MoM is 25-row algebra.
-    """
-    t = Tables(spark, sf_dir)
-    rates = (
-        t.orders.join(
-            F.broadcast(t.customer.select("c_custkey", "c_nationkey")),
-            F.col("o_custkey") == F.col("c_custkey"),
-        )
-        .join(
-            F.broadcast(t.nation.select("n_nationkey", "n_name")),
-            F.col("c_nationkey") == F.col("n_nationkey"),
-        )
-        .groupBy(F.col("n_name").alias("nation"))
-        .agg(
-            dec38(F.count(F.lit(1))).alias("n_orders"),
-            dec38(
-                F.sum(F.when(F.col("o_orderstatus") == "F", 1).otherwise(0))
-            ).alias("k_pos"),
-        )
-    )
-    m6 = F.lit(1_000_000).cast("decimal(38,0)")
-    g9 = F.lit(10**9).cast("decimal(38,0)")
-    pm = rates.select(
-        "nation",
-        "n_orders",
-        "k_pos",
-        halfup_div(m6 * F.col("k_pos"), F.col("n_orders")).alias("p_micro"),
-        halfup_div(g9, F.col("n_orders")).alias("inv_nano"),
-    )
-    gstats = pm.agg(
-        dec38(F.count(F.lit(1))).alias("g"),
-        F.sum("p_micro").alias("sp"),
-        F.sum("inv_nano").alias("s_inv_nano"),
-    ).select(
-        "g",
-        "s_inv_nano",
-        halfup_div(F.col("sp"), F.col("g")).alias("pbar_micro"),
-    )
-    s2 = (
-        pm.crossJoin(F.broadcast(gstats))
-        .agg(
-            F.sum(
-                (F.col("p_micro") - F.col("pbar_micro"))
-                * (F.col("p_micro") - F.col("pbar_micro"))
-            ).alias("sdev2"),
-            F.max("g").alias("g"),
-            F.max("pbar_micro").alias("pbar_micro"),
-            F.max("s_inv_nano").alias("s_inv_nano"),
-        )
-        .select(
-            "g",
-            "pbar_micro",
-            halfup_div(F.col("sdev2"), F.col("g") - 1).alias("s2_pico"),
-            halfup_div(F.col("s_inv_nano"), F.col("g")).alias("mean_inv_nano"),
-        )
-    )
-    mo = s2.select(
-        "g",
-        "pbar_micro",
-        "s2_pico",
-        halfup_div(
-            F.col("pbar_micro") * (m6 - F.col("pbar_micro")) * F.col("mean_inv_nano"),
-            g9,
-        ).alias("vw_pico"),
-    )
-    k3 = F.lit(1000).cast("decimal(38,0)")
-    mm = mo.select(
-        "pbar_micro",
-        F.when(
-            F.col("s2_pico") - F.col("vw_pico") > 0,
-            F.greatest(
-                halfup_div(
-                    k3 * F.col("pbar_micro") * (m6 - F.col("pbar_micro")),
-                    F.col("s2_pico") - F.col("vw_pico"),
-                )
-                - 1000,
-                F.lit(0).cast("decimal(38,0)"),
-            ),
-        ).alias("m_milli"),
-    )
-    out = pm.crossJoin(F.broadcast(mm))
-    shrunk = F.when(F.col("m_milli").isNull(), F.col("pbar_micro")).otherwise(
-        halfup_div(
-            g9 * F.col("k_pos") + F.col("m_milli") * F.col("pbar_micro"),
-            k3 * F.col("n_orders") + F.col("m_milli"),
-        )
-    )
-    weight = F.when(F.col("m_milli").isNull(), F.lit(1000)).otherwise(
-        halfup_div(k3 * F.col("m_milli"), k3 * F.col("n_orders") + F.col("m_milli"))
-    )
-    return out.select(
-        "nation",
-        F.col("n_orders").cast("long").alias("n_orders"),
-        F.col("k_pos").cast("long").alias("n_pos"),
-        F.col("p_micro").cast("long").alias("raw_micro"),
-        F.col("m_milli").cast("long").alias("prior_strength_milli"),
-        shrunk.cast("long").alias("shrunk_micro"),
-        weight.cast("long").alias("prior_weight_milli"),
-    ).orderBy("nation")
 
 
 # ---------------------------------------------------------------------------

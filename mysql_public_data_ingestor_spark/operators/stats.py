@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.exact import quantize, round_int_ratio
+from ..functions.exact import order_cents, quantize, round_int_ratio
 from ..registry import register
 from ..tables import Tables
 
@@ -370,7 +370,7 @@ def stats_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     so even the thresholds are engine-portable.
     """
     t = Tables(spark, sf_dir)
-    cents = F.floor(F.col("o_totalprice") * 100.0 + F.lit(0.5)).cast("long")
+    cents = order_cents()
     per_cust = t.orders.groupBy("o_custkey").agg(
         F.max(F.col("o_orderdate").cast("date")).alias("last_order"),
         F.count(F.lit(1)).alias("frequency"),
@@ -445,7 +445,7 @@ def agg_median_p90_disc(spark: SparkSession, sf_dir: str) -> DataFrame:
     path. This query pins the exact end of the dial.
     """
     t = Tables(spark, sf_dir)
-    cents = F.floor(F.col("o_totalprice") * 100.0 + F.lit(0.5)).cast("long")
+    cents = order_cents()
     exact = str(2**31 - 1)
     return (
         t.orders.select("o_orderpriority", cents.alias("cents"))
@@ -499,7 +499,7 @@ def stats_cohort_ltv_triangle(spark: SparkSession, sf_dir: str) -> DataFrame:
     firsts = t.orders.groupBy("o_custkey").agg(
         F.date_trunc("month", F.min("o_orderdate")).alias("cohort_month")
     )
-    cents = F.floor(F.col("o_totalprice") * 100.0 + F.lit(0.5)).cast("long")
+    cents = order_cents()
     joined = t.orders.join(firsts, "o_custkey").select(
         "cohort_month",
         (
@@ -567,7 +567,7 @@ def dq_benford_order_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast total: trivially 100 TB-safe.
     """
     t = Tables(spark, sf_dir)
-    cents = F.floor(F.col("o_totalprice") * 100.0 + F.lit(0.5)).cast("long")
+    cents = order_cents()
     digit = F.substring(cents.cast("string"), 1, 1).cast("long")
     obs = (
         t.orders.select(digit.alias("digit"))
@@ -1240,7 +1240,7 @@ def stats_jackknife_mean_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = t.orders.select(
         "o_orderpriority",
         (F.col("o_orderkey") % B).alias("blk"),
-        F.floor(F.col("o_totalprice") * 100.0 + F.lit(0.5)).cast("long").alias("cents"),
+        order_cents().alias("cents"),
     )
     per = o.groupBy("o_orderpriority", "blk").agg(
         F.count(F.lit(1)).alias("n_i"), F.sum("cents").alias("s_i")
@@ -1547,8 +1547,7 @@ def stats_bootstrap_mean_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = Tables(spark, sf_dir)
     o = t.orders.select(
         "o_orderkey",
-        F.floor(F.col("o_totalprice") * F.lit(100.0) + F.lit(0.5))
-        .cast("long")
+        order_cents()
         .alias("cents"),
     )
     # replica index must be long BEFORE the seed multiply: sequence()
@@ -1661,8 +1660,7 @@ def dq_order_lineitem_reconciliation(spark: SparkSession, sf_dir: str) -> DataFr
     )
     o = t.orders.select(
         "o_orderkey",
-        F.floor(F.col("o_totalprice") * F.lit(100.0) + F.lit(0.5))
-        .cast("long")
+        order_cents()
         .alias("stated_cents"),
     )
     joined = o.join(items, o.o_orderkey == items.l_orderkey, "left").select(
@@ -1746,8 +1744,7 @@ def stats_gini_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "c_nationkey",
             "o_custkey",
-            F.floor(F.col("o_totalprice") * F.lit(100.0) + F.lit(0.5))
-            .cast("long")
+            order_cents()
             .alias("cents_row"),
         )
         .groupBy("c_nationkey", "o_custkey")

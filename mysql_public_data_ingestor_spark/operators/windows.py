@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.exact import exact_sum_window, quantize
+from ..functions.exact import exact_sum_window, order_cents, quantize
 from ..registry import register
 from ..tables import Tables
 
@@ -271,7 +271,7 @@ def window_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey",
         "o_custkey",
         F.count(F.lit(1)).over(w).alias("n_orders_60d"),
-        (F.sum(F.floor(F.col("o_totalprice") * 100.0 + 0.5).cast("long")).over(w) / 100.0).alias(
+        (F.sum(order_cents()).over(w) / 100.0).alias(
             "spend_60d"
         ),
     )

@@ -97,16 +97,13 @@ def _ensure_loaded() -> None:
         roundeight3,
         roundeleven,
         roundeleven2,
-        roundeleven3,
         roundeleven4,
         roundeleven5,
-        roundeleven6,
         roundfive,
         roundfourteen,
         roundfourteen2,
         roundfourteen3,
         roundfourteen4,
-        roundfourteen5,
         roundfourteen6,
         roundfourteen7,
         roundfourteen8,
@@ -119,7 +116,6 @@ def _ensure_loaded() -> None:
         roundten2,
         roundten3,
         roundtenb,
-        roundthirteen,
         roundthirteen3,
         roundthirteen4,
         roundthirteen5,
@@ -133,12 +129,15 @@ def _ensure_loaded() -> None:
         roundtwelve3,
         roundtwelve4,
         roundtwelve5,
-        roundtwelve6,
         roundtwelve8,
         roundtwelve9,
         similarity,
         sketches,
         stats,
+        stats_dist,
+        stats_models,
+        stats_rank,
+        stats_tables,
         text,
         timeseries,
         tpch,

@@ -28,21 +28,19 @@ def test_harmonic_closeness_reciprocals():
 def test_gumbel_constants():
     """roundnine2.GUMBEL_PI / GUMBEL_GAMMA: pi from math, Euler gamma
     re-derived via the Euler–Maclaurin tail (error O(n^-4))."""
-    from mysql_public_data_ingestor_spark.operators import roundnine2 as r92
+    from mysql_public_data_ingestor_spark.operators import stats_dist
 
-    assert r92.GUMBEL_PI == math.pi
+    assert stats_dist.GUMBEL_PI == math.pi
     n = 10**6
     h = sum(1.0 / i for i in range(1, n + 1))
     gamma = h - math.log(n) - 1.0 / (2 * n) + 1.0 / (12 * n * n)
-    assert abs(r92.GUMBEL_GAMMA - gamma) < 1e-12
+    assert abs(stats_dist.GUMBEL_GAMMA - gamma) < 1e-12
 
 
 def test_holm_critical_ladder():
     """roundtwelve6.HOLM_CRIT_MICRO re-derived by erf bisection:
     chi2_1 quantile at 1 - 0.05/(m - rank + 1) for m = 3."""
-    from mysql_public_data_ingestor_spark.operators.roundtwelve6 import (
-        HOLM_CRIT_MICRO,
-    )
+    from mysql_public_data_ingestor_spark.operators.stats_rank import HOLM_CRIT_MICRO
 
     def ppf_norm(p: float) -> float:
         lo, hi = 0.0, 10.0

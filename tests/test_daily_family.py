@@ -5,7 +5,7 @@ series once.
   defined in ``operators/daily*.py`` modules, and those modules register
   nothing else.
 - One derivation: the orders day grouping and the calendar band-join
-  rank are written only in ``operators/daily.py``.
+  rank (of any day series) are written only in ``operators/daily.py``.
 - Head values: the count and cents heads' ``(day, y, k)`` equal a
   pure-pyarrow computation over the fixture's ``orders.parquet``.
 """
@@ -120,33 +120,12 @@ def test_orders_day_series_is_derived_in_one_place():
     assert hits == [("daily.py", "day_series")], hits
 
 
-def _reads_orders_days(source: str) -> bool:
-    """Whether a function's code (docstring aside) reads ``o_orderdate``
-    or calls one of the daily steps."""
-    fn = ast.parse(source).body[0]
-    body = fn.body[1:] if ast.get_docstring(fn) else fn.body
-    for node in ast.walk(ast.Module(body=body, type_ignores=[])):
-        if isinstance(node, ast.Constant) and node.value == "o_orderdate":
-            return True
-        if isinstance(node, ast.Name) and (
-            node.id in ("day_series", "calendar_rank") or node.id.startswith("_daily_")
-        ):
-            return True
-    return False
-
-
 def test_calendar_rank_is_built_in_one_place():
-    """The only rank join over the orders day series is
-    ``daily.calendar_rank``; a rank join elsewhere must be over another
-    series (it neither reads ``o_orderdate`` nor calls a daily step)."""
-    hits = _functions_with(RANK_JOIN)
-    assert [(f, fn) for f, fn, _ in hits if f == "daily.py"] == [
-        ("daily.py", "calendar_rank")
-    ]
-    orders = sorted(
-        (f, fn) for f, fn, seg in hits if f != "daily.py" and _reads_orders_days(seg)
-    )
-    assert not orders, f"orders calendar rank built outside operators/daily.py: {orders}"
+    """The only calendar band-join rank in the operators is
+    ``daily.calendar_rank``; a series over another calendar (the events
+    days) calls it too."""
+    hits = [(f, fn) for f, fn, _ in _functions_with(RANK_JOIN)]
+    assert hits == [("daily.py", "calendar_rank")], hits
 
 
 def _pyarrow_heads(sf_dir: str) -> dict[str, list[tuple]]:

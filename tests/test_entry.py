@@ -71,6 +71,21 @@ def test_bench_and_plan_dump_names_resolve():
     assert not missing_plans, missing_plans
 
 
+def test_plan_manifest_names_match_registry():
+    """The committed plan manifest (``make manifest``) covers exactly the
+    registered queries: a query added, renamed or deleted without a
+    regenerated manifest fails here, with no Spark session."""
+    import json
+    import os
+
+    from mysql_public_data_ingestor_spark.registry import all_queries
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    with open(os.path.join(root, "plans", "MANIFEST.json")) as f:
+        manifest = json.load(f)
+    assert sorted(manifest) == sorted(all_queries())
+
+
 def test_bench_history_matches_scale_and_cores(tmp_path, capsys):
     """bench.py writes and diffs one detail file per (sf, cpus): a run at
     another scale or core count finds no history rather than diffing

@@ -443,14 +443,10 @@ SINGLE_PARTITION_ALLOWLIST = {
     # pre-activation sweep in tests/test_roundnine.py — every global
     # ordered pass below runs over a POST-AGGREGATION bounded domain,
     # never over raw fact rows):
-    # ordered ECDF over the <= 50-distinct-quantity domain.
-    "stats_cvm_two_sample",
     # prefix sum + running min over the ~2.4k-calendar-day series.
     "stats_page_hinkley_orders",
     # total-recovery window over the 10 decile rows.
     "ml_brier_decomposition",
-    # doubled mid-ranks over the <= 50 pooled distinct quantities.
-    "stats_ansari_bradley_quantity",
     # frontier cumulative over the collapsed DISTINCT price-cents
     # curve of the dimension table.
     "relational_skyline_pareto",
@@ -476,41 +472,16 @@ SINGLE_PARTITION_ALLOWLIST = {
     # lag/flag/cumsum run detection over the POST-AGGREGATION
     # calendar-day exceedance series (~2.4k rows at any corpus size).
     "events_peak_over_threshold_clusters",
-    # ECDF cumulative over the <= 50-distinct-quantity pooled domain
-    # (same bounded-domain class as stats_cvm_two_sample).
-    "stats_anderson_darling_quantity",
     # round-10 activation (roundtenb.py): descending ROC cumulative
     # over the POST-AGGREGATION <= 10001-value quantized score grid —
     # same bounded-domain class (and same upstream aggregate) as
     # ml_youden_optimal_threshold above.
     "ml_cost_optimal_threshold",
-    # round-12 activation (roundtwelve3.py): the pooled mid-rank
-    # cumulative runs over the POST-AGGREGATION <= 50-distinct-quantity
-    # value domain (same bounded domain as stats_cvm_two_sample /
-    # stats_ansari_bradley_quantity); the group-pair Sort feeds the
-    # final 10-row (5 choose 2) ordered output.
-    "stats_dunn_posthoc_quantity",
-    # round-12 batch K (roundtwelve6.py): shares the Dunn <= 50-value
-    # rank grid above (same bounded cumulative, 3-row tail).
-    "stats_holm_stepdown_dunn",
-    # pooled extreme-alternating rank cumulative over the <= 50
-    # distinct-quantity POST-AGGREGATION domain (the cvm/ansari class).
-    "stats_siegel_tukey_scale",
-    # pooled squared-rank cumulative over the <= 150-value scaled
-    # deviation domain (50 quantity values x 3 group scalings) —
-    # bounded by the value domain, never by rows.
-    "stats_conover_squared_ranks",
     # round-12 batch L (now daily_change.py): cumulative-path + running-
     # peak windows over the POST-AGGREGATION ~2.4k-calendar-day series
     # (the stats_ljung_box_daily class; replaced a 27.5s chain of
     # three day^2 non-equi prefix joins).
     "events_cusum_max_drawdown",
-    # round-13 activation (roundthirteen.py, flagged at bank time in
-    # the module docstrings): pooled mid-rank + within-group rank
-    # cumulatives over the POST-AGGREGATION <= 50-distinct-quantity
-    # value grid (the cvm/ansari/Dunn class — bounded by the value
-    # domain, never by rows).
-    "stats_brunner_munzel_ab",
     # successive-difference rank cumulatives over the POST-AGGREGATION
     # ~2.4k-calendar-day daily-count value grid plus its lag join —
     # the stats_ljung_box_daily bounded-calendar class.

@@ -154,7 +154,7 @@ def test_cliffs_delta_matches_python(spark, sf_dir, lineitem_pdf):
 
 
 def test_pythagorean_means_matches_python(spark, sf_dir, lineitem_pdf):
-    from mysql_public_data_ingestor_spark.operators.roundeight3 import HM_RECIP_SCALE
+    from mysql_public_data_ingestor_spark.operators.stats_dist import HM_RECIP_SCALE
 
     got = _q("stats_pythagorean_means_quantity", spark, sf_dir).set_index("return_flag")
     df = lineitem_pdf.dropna(subset=["l_quantity"])
@@ -241,7 +241,7 @@ def test_fd_audit_matches_python(spark, sf_dir):
 
 
 def test_wilcoxon_signed_rank_matches_python(spark, sf_dir):
-    from mysql_public_data_ingestor_spark.operators.roundeight3 import (
+    from mysql_public_data_ingestor_spark.operators.stats_rank import (
         WSR_TYPE_A,
         WSR_TYPE_B,
     )
@@ -276,7 +276,7 @@ def test_wilcoxon_signed_rank_matches_python(spark, sf_dir):
 
 
 def test_logrank_matches_python(spark, sf_dir, lineitem_pdf, orders_pdf):
-    from mysql_public_data_ingestor_spark.operators.roundeight3 import (
+    from mysql_public_data_ingestor_spark.operators.stats_dist import (
         LOGRANK_G1,
         LOGRANK_G2,
     )

@@ -12,7 +12,7 @@ from collections import defaultdict
 
 import pytest
 
-from mysql_public_data_ingestor_spark.operators import roundeleven3 as r113
+from mysql_public_data_ingestor_spark.operators import stats_models as r113
 from mysql_public_data_ingestor_spark.tables import Tables
 from tools.check_correctness import compare, duck_connection
 
@@ -198,7 +198,7 @@ def test_seasonal_mk_matches_python(spark, sf_dir):
 
 
 def test_fleiss_matches_python(spark, sf_dir):
-    from mysql_public_data_ingestor_spark.operators.roundeight import (
+    from mysql_public_data_ingestor_spark.operators.stats_samples import (
         COCHRAN_MIN_SENTENCES,
         MCNEMAR_MIN_CHARS,
         MCNEMAR_MIN_TOKENS,

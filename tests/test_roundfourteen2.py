@@ -11,7 +11,7 @@ from collections import Counter, defaultdict
 
 import pytest
 
-from mysql_public_data_ingestor_spark.operators import roundfourteen2 as r142
+from mysql_public_data_ingestor_spark.operators import stats_rank
 from mysql_public_data_ingestor_spark.registry import all_queries
 from mysql_public_data_ingestor_spark.tables import Tables
 from tools.check_correctness import compare, duck_connection
@@ -136,7 +136,7 @@ def test_quantile_shift_matches_python(spark, sf_dir):
         return vals[-1]
 
     got = _q("stats_quantile_shift_function")(spark, sf_dir).toPandas()
-    assert list(got["pct"]) == list(r142.SHIFT_PCTS)
+    assert list(got["pct"]) == list(stats_rank.SHIFT_PCTS)
     for _, row in got.iterrows():
         p = int(row["pct"])
         qa = quant(a, na, p)

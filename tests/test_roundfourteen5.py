@@ -73,7 +73,7 @@ def test_plan_bars(spark, sf_dir, name):
 
 
 def _gate_sums(spark, sf_dir):
-    from mysql_public_data_ingestor_spark.operators.roundeight import (
+    from mysql_public_data_ingestor_spark.operators.stats_samples import (
         COCHRAN_MIN_SENTENCES,
         MCNEMAR_MIN_CHARS,
         MCNEMAR_MIN_TOKENS,
@@ -175,11 +175,11 @@ def _wilson(k, n, z):
 
 
 def test_newcombe_matches_python(spark, sf_dir):
-    from mysql_public_data_ingestor_spark.operators.roundfourteen5 import (
+    from mysql_public_data_ingestor_spark.operators.stats_tables import (
         NEWCOMBE_R1,
         NEWCOMBE_R2,
     )
-    from mysql_public_data_ingestor_spark.operators.roundsix import WILSON_Z
+    from mysql_public_data_ingestor_spark.operators.stats_tables import WILSON_Z
 
     t = Tables(spark, sf_dir)
     pdf = (
@@ -215,9 +215,7 @@ def test_newcombe_matches_python(spark, sf_dir):
 
 
 def test_yuen_matches_python(spark, sf_dir):
-    from mysql_public_data_ingestor_spark.operators.roundfourteen5 import (
-        YUEN_TRIM_DEN,
-    )
+    from mysql_public_data_ingestor_spark.operators.stats_models import YUEN_TRIM_DEN
 
     t = Tables(spark, sf_dir)
     pdf = (

@@ -110,7 +110,7 @@ def test_lorenz_asymmetry_matches_python(spark, sf_dir):
 
 
 def test_atkinson_matches_python(spark, sf_dir):
-    from mysql_public_data_ingestor_spark.operators.roundfourteen6 import (
+    from mysql_public_data_ingestor_spark.operators.stats_dist import (
         ATK_RECIP_SCALE,
         ATK_SQRT_SCALE,
     )

@@ -110,7 +110,7 @@ def test_herdan_maas_matches_python(spark, sf_dir):
 
 
 def test_readability_matches_python(spark, sf_dir):
-    from mysql_public_data_ingestor_spark.operators.roundeight import (  # noqa: F401
+    from mysql_public_data_ingestor_spark.operators.stats_samples import (  # noqa: F401
         MCNEMAR_MIN_CHARS,
     )
 

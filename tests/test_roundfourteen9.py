@@ -209,7 +209,7 @@ def test_recurrence_matches_python(spark, sf_dir):
 
 
 def test_phi_yule_matches_python(spark, sf_dir):
-    from mysql_public_data_ingestor_spark.operators.roundeight import (
+    from mysql_public_data_ingestor_spark.operators.stats_samples import (
         COCHRAN_MIN_SENTENCES,
         MCNEMAR_MIN_CHARS,
         MCNEMAR_MIN_TOKENS,

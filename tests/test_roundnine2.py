@@ -18,6 +18,7 @@ import pytest
 
 from mysql_public_data_ingestor_spark.operators import graph_paths
 from mysql_public_data_ingestor_spark.operators import roundnine2 as r92
+from mysql_public_data_ingestor_spark.operators import stats_dist
 from mysql_public_data_ingestor_spark.functions.detmath import ref_det_ln_q
 from mysql_public_data_ingestor_spark.tables import Tables
 
@@ -363,7 +364,7 @@ def test_partial_correlation_matches_python(spark, sf_dir, lineitem_pdf):
 
 
 def test_cronbach_matches_python(spark, sf_dir, docs_pdf):
-    from mysql_public_data_ingestor_spark.operators.roundeight import (
+    from mysql_public_data_ingestor_spark.operators.stats_samples import (
         COCHRAN_MIN_SENTENCES,
         MCNEMAR_MIN_CHARS,
         MCNEMAR_MIN_TOKENS,
@@ -395,7 +396,7 @@ def test_gumbel_matches_python(spark, sf_dir, events_pdf):
     s, q = sum(m), sum(v * v for v in m)
     beta_micro = math.sqrt(
         6.0 * (float(n) * float(q) - float(s) * float(s)) / (float(n) * (float(n) - 1.0))
-    ) / r92.GUMBEL_PI
+    ) / stats_dist.GUMBEL_PI
 
     def q6(v):
         return math.floor(v * 1e6 + 0.5) / 1e6
@@ -403,7 +404,7 @@ def test_gumbel_matches_python(spark, sf_dir, events_pdf):
     assert int(got["n_days"]) == n
     assert got["mean_max"] == _half_up(s, n * 10**6)
     assert got["gumbel_beta"] == q6(beta_micro / 1e6)
-    assert got["gumbel_mu"] == q6((float(s) / float(n) - r92.GUMBEL_GAMMA * beta_micro) / 1e6)
+    assert got["gumbel_mu"] == q6((float(s) / float(n) - stats_dist.GUMBEL_GAMMA * beta_micro) / 1e6)
 
 
 def test_pot_clusters_matches_python(spark, sf_dir, orders_pdf):

@@ -13,6 +13,8 @@ import pytest
 from mysql_public_data_ingestor_spark.operators import graph_paths
 from mysql_public_data_ingestor_spark.operators import daily_hypothesis
 from mysql_public_data_ingestor_spark.operators import roundten2
+from mysql_public_data_ingestor_spark.operators import stats_rank
+from mysql_public_data_ingestor_spark.operators import stats_tables
 from mysql_public_data_ingestor_spark.tables import Tables
 from tools.check_correctness import compare, duck_connection
 
@@ -695,7 +697,7 @@ def test_mantel_haenszel_matches_python(spark, sf_dir):
     sum_ad = sum_bc = 0
     n_strata = 0
     for _, grp in j.groupby("c_nationkey"):
-        e = grp["o_orderpriority"].isin(roundten2.MH_EXPOSED)
+        e = grp["o_orderpriority"].isin(stats_tables.MH_EXPOSED)
         y = grp["o_orderstatus"] == "F"
         a = int((e & y).sum())
         b = int((e & ~y).sum())
@@ -869,7 +871,7 @@ def test_permutation_test_matches_python(spark, sf_dir):
     d_obs = abs(sa * nb - sb * na)
     den_obs = na * nb
     n_exceed = 0
-    B = roundten2.PERM_B
+    B = stats_rank.PERM_B
     for b in range(B):
         ga = [u for u in users if _sha60(f"perm{b}|{u}") % 2 == 0]
         pna = len(ga)

@@ -12,6 +12,7 @@ import pytest
 
 from mysql_public_data_ingestor_spark.operators import daily_change, daily_spectral
 from mysql_public_data_ingestor_spark.operators import roundten3
+from mysql_public_data_ingestor_spark.operators import stats_dist
 from mysql_public_data_ingestor_spark.tables import Tables
 from tools.check_correctness import compare, duck_connection
 
@@ -672,8 +673,8 @@ def test_rayleigh_matches_python(spark, sf_dir):
     for _, row in got.iterrows():
         cc = hrs[row["event_type"]]
         n = sum(cc.values())
-        sc = sum(c * roundten3.RAYLEIGH_COSQ[h] for h, c in cc.items())
-        ss = sum(c * roundten3.RAYLEIGH_SINQ[h] for h, c in cc.items())
+        sc = sum(c * stats_dist.RAYLEIGH_COSQ[h] for h, c in cc.items())
+        ss = sum(c * stats_dist.RAYLEIGH_SINQ[h] for h, c in cc.items())
         assert int(row["n"]) == n
         assert row["rayleigh_z"] == _half_up(sc * sc + ss * ss, n * 10**12)
         assert row["rbar_sq"] == _half_up(sc * sc + ss * ss, n * n * 10**12)

@@ -9,7 +9,7 @@ from collections import Counter
 
 import pytest
 
-from mysql_public_data_ingestor_spark.operators import roundthirteen as r13
+from mysql_public_data_ingestor_spark.operators import stats_rank as r13
 from mysql_public_data_ingestor_spark.registry import all_queries
 from mysql_public_data_ingestor_spark.tables import Tables
 from tools.check_correctness import compare, duck_connection

@@ -16,6 +16,7 @@ import pytest
 from mysql_public_data_ingestor_spark.functions.detmath import LN2_MICRO
 from mysql_public_data_ingestor_spark.operators import daily_spectral, graph_centrality
 from mysql_public_data_ingestor_spark.operators import roundthirteen7 as r137
+from mysql_public_data_ingestor_spark.operators import stats_dist
 from mysql_public_data_ingestor_spark.tables import Tables
 from tools.check_correctness import compare, duck_connection
 
@@ -174,7 +175,7 @@ def test_capability_matches_python(spark, sf_dir):
     sx = sum(xs)
     sxx = sum(x * x for x in xs)
     vc = n * sxx - sx * sx
-    lsl, usl = r137.CAP_LSL_DAYS, r137.CAP_USL_DAYS
+    lsl, usl = stats_dist.CAP_LSL_DAYS, stats_dist.CAP_USL_DAYS
     mg = min(usl * n - sx, sx - lsl * n)
     mg_milli = _halfup_int(1000 * mg, n)
     got = (

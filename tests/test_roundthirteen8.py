@@ -16,6 +16,7 @@ import pytest
 from mysql_public_data_ingestor_spark.operators import graph_centrality
 from mysql_public_data_ingestor_spark.operators import daily_hypothesis
 from mysql_public_data_ingestor_spark.operators import roundthirteen8 as r138
+from mysql_public_data_ingestor_spark.operators import stats_dist
 from mysql_public_data_ingestor_spark.tables import Tables
 from tools.check_correctness import compare, duck_connection
 
@@ -50,11 +51,11 @@ def test_trig_constant_anchors():
     arithmetic sharing nothing with the module (SCALE §5n rule)."""
     for d in range(1, 8):
         theta = 2.0 * math.pi * (d - 1) / 7.0
-        assert r138.COS7_MICRO[d] == int(math.floor(math.cos(theta) * 1e6 + 0.5))
-        assert r138.SIN7_MICRO[d] == int(math.floor(math.sin(theta) * 1e6 + 0.5))
+        assert stats_dist.COS7_MICRO[d] == int(math.floor(math.cos(theta) * 1e6 + 0.5))
+        assert stats_dist.SIN7_MICRO[d] == int(math.floor(math.sin(theta) * 1e6 + 0.5))
     # resultant of a uniform distribution is 0 by symmetry
-    assert abs(sum(r138.COS7_MICRO.values())) <= 3
-    assert abs(sum(r138.SIN7_MICRO.values())) <= 3
+    assert abs(sum(stats_dist.COS7_MICRO.values())) <= 3
+    assert abs(sum(stats_dist.SIN7_MICRO.values())) <= 3
 
 
 @pytest.mark.parametrize("name", NAMES)
@@ -86,8 +87,8 @@ def test_circular_matches_python(spark, sf_dir):
     pdf = Tables(spark, sf_dir).orders.select("o_orderdate").toPandas()
     cnt = Counter(d.isoweekday() for d in pdf["o_orderdate"])
     n = sum(cnt.values())
-    c = sum(cnt[d] * r138.COS7_MICRO[d] for d in cnt)
-    s = sum(cnt[d] * r138.SIN7_MICRO[d] for d in cnt)
+    c = sum(cnt[d] * stats_dist.COS7_MICRO[d] for d in cnt)
+    s = sum(cnt[d] * stats_dist.SIN7_MICRO[d] for d in cnt)
     modal = sorted(cnt.items(), key=lambda kv: (-kv[1], kv[0]))[0][0]
     got = (
         _spec("stats_circular_weekday_concentration")

@@ -13,7 +13,8 @@ from collections import Counter, defaultdict
 import pytest
 
 from mysql_public_data_ingestor_spark.operators import daily_hypothesis, daily_spectral
-from mysql_public_data_ingestor_spark.operators import roundthirteen9 as r139
+from mysql_public_data_ingestor_spark.operators import stats_models
+from mysql_public_data_ingestor_spark.operators import stats_tables
 from mysql_public_data_ingestor_spark.tables import Tables
 from tools.check_correctness import compare, duck_connection
 
@@ -61,13 +62,13 @@ def test_bh_critical_ladder_anchor():
     for k in range(1, 26):
         alpha_k = 0.05 * k / 25
         z = z_for(1 - alpha_k / 2)
-        assert r139.BH_CRIT_MICRO[k] == int(math.floor(z * z * 1e6 + 0.5)), k
+        assert stats_models.BH_CRIT_MICRO[k] == int(math.floor(z * z * 1e6 + 0.5)), k
     # ladder strictly decreasing; endpoints are the chi^2_1 textbook
     # quantiles at 0.998 and 0.95
-    vals = [r139.BH_CRIT_MICRO[k] for k in range(1, 26)]
+    vals = [stats_models.BH_CRIT_MICRO[k] for k in range(1, 26)]
     assert vals == sorted(vals, reverse=True)
     assert abs(vals[-1] / 1e6 - 3.8415) < 1e-3
-    assert abs(r139.BA_Z_SQ_NUM / r139.BA_Z_SQ_DEN - 1.96**2) < 1e-12
+    assert abs(stats_tables.BA_Z_SQ_NUM / stats_tables.BA_Z_SQ_DEN - 1.96**2) < 1e-12
 
 
 @pytest.mark.parametrize("name", NAMES)
@@ -214,7 +215,7 @@ def test_bland_altman_matches_python(spark, sf_dir):
     sd = sum(ds)
     sdd = sum(d * d for d in ds)
     vc = n * sdd - sd * sd
-    loa = _halfup_int(r139.BA_Z_SQ_NUM * 1000 * vc, r139.BA_Z_SQ_DEN * n * (n - 1))
+    loa = _halfup_int(stats_tables.BA_Z_SQ_NUM * 1000 * vc, stats_tables.BA_Z_SQ_DEN * n * (n - 1))
     n_within = sum(
         1
         for d in ds
@@ -273,7 +274,7 @@ def test_bh_fdr_matches_python(spark, sf_dir):
     ranked = sorted(z2s.items(), key=lambda kv: (-kv[1], kv[0]))
     k_star = 0
     for rank, (nat, z2) in enumerate(ranked, start=1):
-        if rank in r139.BH_CRIT_MICRO and z2 >= r139.BH_CRIT_MICRO[rank]:
+        if rank in stats_models.BH_CRIT_MICRO and z2 >= stats_models.BH_CRIT_MICRO[rank]:
             k_star = rank
     got = _spec("stats_bh_fdr_nation_urgency").fn(spark, sf_dir).toPandas()
     assert len(got) == len(cnt)
@@ -285,7 +286,7 @@ def test_bh_fdr_matches_python(spark, sf_dir):
         assert int(row["n_urgent"]) == cnt[nat][1]
         assert int(row["z2_micro"]) == z2
         assert int(row["bh_rank"]) == rank
-        assert int(row["crit_micro"]) == r139.BH_CRIT_MICRO[rank]
+        assert int(row["crit_micro"]) == stats_models.BH_CRIT_MICRO[rank]
         assert int(row["reject"]) == (1 if rank <= k_star else 0)
     # structural step-up invariants: rejections form a rank prefix
     rejected = list(got.sort_values("bh_rank")["reject"])
@@ -293,7 +294,7 @@ def test_bh_fdr_matches_python(spark, sf_dir):
     # BH rejects everything Holm-style raw passing would — the step-up
     # set contains every rank whose own raw test passes
     for rank, (nat, z2) in enumerate(ranked, start=1):
-        if z2 >= r139.BH_CRIT_MICRO[rank]:
+        if z2 >= stats_models.BH_CRIT_MICRO[rank]:
             assert rank <= k_star
 
 

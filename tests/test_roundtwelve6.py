@@ -11,7 +11,7 @@ from collections import Counter, defaultdict
 
 import pytest
 
-from mysql_public_data_ingestor_spark.operators import roundtwelve6 as r126
+from mysql_public_data_ingestor_spark.operators import stats_rank as r126
 from mysql_public_data_ingestor_spark.tables import Tables
 from tools.check_correctness import compare, duck_connection
 

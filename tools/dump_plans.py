@@ -5,16 +5,13 @@ Usage:
   python tools/dump_plans.py [sf_dir]
       the headline queries (PLAN_QUERIES) into PLANS.md at the repo root
       (not committed; ``make plans`` regenerates it);
-  python tools/dump_plans.py <suffix> <out_dir> [query ...]
-      one ``<out_dir>/<query>_<suffix>.txt`` per named query, against
-      SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) — run it with
-      ``before`` on the parent checkout and ``after`` on the change to
-      pair an optimization's plans (``plans/r15/``);
   python tools/dump_plans.py --manifest <out.json> [query ...]
       the masked plan of each named query (default: every registered
       query) as ``{name: {sha256, operators: {operator: count}}}``,
       against SPARK_GRAFT_SF_DIR (required); build it on two checkouts
-      at the same scale and core count to compare them;
+      at the same scale and core count to compare them. The committed
+      ``plans/MANIFEST.json`` is the sf0.01, 4-core manifest of every
+      query (``make manifest``);
   python tools/dump_plans.py --diff <a.json> <b.json>
       the queries whose masked plan differs between two manifests, each
       with its operator-count deltas (b minus a).
@@ -210,18 +207,6 @@ PLAN_QUERIES = [
 ]
 
 
-def dump_pairs(suffix: str, out_dir: str, names: list[str]) -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    os.makedirs(out_dir, exist_ok=True)
-    spark = get_spark("dump_plans")
-    specs = all_queries()
-    for name in names:
-        df = specs[name].fn(spark, sf_dir)
-        with open(os.path.join(out_dir, f"{name}_{suffix}.txt"), "w") as f:
-            f.write(formatted_plan(df))
-        print(f"wrote {name}_{suffix}.txt")
-
-
 # Tokens that differ between two builds of the same plan: expression ids
 # (``#123``, ``#45L``), the 12-hex fixture tag of a warehouse table, RDD
 # and plan ids, and the checkout the plan was built in.
@@ -314,8 +299,6 @@ def main() -> None:
         write_manifest(args[1], args[2:])
     elif args[:1] == ["--diff"]:
         diff_manifests(args[1], args[2])
-    elif len(args) >= 2:
-        dump_pairs(args[0], args[1], args[2:])
     else:
         dump_headline(args[0] if args else "/root/testdata/sf0.1")
 
