@@ -56,13 +56,14 @@ def day_series(t: Tables, y: Column, by_dow: bool = False) -> DataFrame:
 
 
 def calendar_rank(daily: DataFrame) -> DataFrame:
-    """``(day, y, k)``: ``k`` = decimal 1-based rank of the day — the
-    house broadcast non-equi self-join over the post-aggregation day
-    table. An inner join, so a null day gets no rank."""
+    """``daily`` (one row per ``day``, e.g. ``(day, y)``) with ``k``, the
+    decimal 1-based rank of the day — the house broadcast non-equi
+    self-join over the post-aggregation day table. An inner join, so a
+    null day gets no rank."""
     b0 = daily.select(F.col("day").alias("day_b"))
     return (
         daily.join(F.broadcast(b0), F.col("day_b") <= F.col("day"))
-        .groupBy("day", "y")
+        .groupBy(*daily.columns)
         .agg(dec38(F.count(F.lit(1))).alias("k"))
     )
 

@@ -33,6 +33,7 @@ from .daily import (
     calendar_rank,
     day_series,
 )
+from .events import day_counts
 
 
 # ---------------------------------------------------------------------------
@@ -1322,9 +1323,7 @@ def events_its_segmented_regression(spark: SparkSession, sf_dir: str) -> DataFra
     from ..functions.exact import round_big_int_ratio
 
     t = Tables(spark, sf_dir)
-    daily = t.events.groupBy(F.to_date("ts").alias("day")).agg(
-        F.count(F.lit(1)).alias("y")
-    )
+    daily = day_counts(t, F.count(F.lit(1)).alias("y"))
     idx = calendar_rank(daily)
     nn = idx.agg(dec38(F.count(F.lit(1))).alias("n_tot"))
     brk = nn.select(

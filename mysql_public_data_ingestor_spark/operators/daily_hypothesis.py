@@ -1354,7 +1354,6 @@ def stats_bartels_rank_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _dixon_oracle() -> str:
-    hd = sql_halfup_div
     return """
     WITH daily AS (
       SELECT CAST(o_orderdate AS DATE) AS day, CAST(count(*) AS BIGINT) AS y
@@ -1596,7 +1595,6 @@ def stats_mcleod_li_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _pois_dev_oracle() -> str:
     from ..functions.detmath import sql_det_ln_steps
 
-    hd = sql_halfup_div
     return f"""
     WITH daily AS (
       SELECT CAST(o_orderdate AS DATE) AS day,
@@ -2718,7 +2716,6 @@ def events_qs_seasonality_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     cc = c0
     for L in QS_LAGS:
         cc = cc.crossJoin(F.broadcast(lag_aggs[L]))
-    md = F.col("m").cast("double")
     cols = [F.col("m").cast("long").alias("m")]
     qs_terms = None
     for L in QS_LAGS:

@@ -901,7 +901,6 @@ def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     with one xor+popcount on two int64s — the cheapest verification of
     any near-dup family here (no set intersection, no text).
     """
-    t = Tables(spark, sf_dir)
     sigs = dedup_simhash(spark, sf_dir)
     chunks = sigs.select(
         "doc_id",

@@ -516,7 +516,6 @@ EC_TOPK = 10
 
 
 def _ec_oracle() -> str:
-    hd = sql_halfup_div
     parts = [
         _SQL_EDGES,
         """

@@ -17,6 +17,9 @@ DuckDB oracle twin per query.
 in ``operators/stats_dist.py``; ``stats_cochran_q_gates`` and
 ``stats_mcnemar_quality_rules`` live in ``operators/stats_tables.py``
 with the other stats queries.
+
+``events_hourly_entropy_profile`` and ``events_runs_test_daily`` live in
+``operators/events_series.py`` with the other events queries.
 """
 
 from __future__ import annotations
@@ -482,216 +485,6 @@ def corpus_ngram_novelty_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(
             F.col("n_gram_instances") > 0,
             round_int_ratio(F.col("n_new_grams"), F.col("n_gram_instances")),
-        ),
-    )
-
-
-# ---------------------------------------------------------------------------
-# 10. Wald–Wolfowitz runs test on the daily value series
-# ---------------------------------------------------------------------------
-
-
-def _runs_oracle() -> str:
-    z = (
-        "(CAST(n_runs AS DOUBLE) - (1.0 + 2.0 * n_above * n_below / (n_above + n_below)))"
-        " / sqrt(2.0 * n_above * n_below * (2.0 * n_above * n_below - n_above - n_below)"
-        " / ((1.0 * (n_above + n_below)) * (n_above + n_below) * (n_above + n_below - 1)))"
-    )
-    return f"""
-    WITH daily AS (
-      SELECT event_type, CAST(ts AS DATE) AS day,
-             sum(CAST(floor(value * 1000000.0 + 0.5) AS BIGINT)) AS x
-      FROM events GROUP BY 1, 2
-    ), ranked AS (
-      SELECT event_type, day, x,
-             row_number() OVER (PARTITION BY event_type ORDER BY x, day) AS rn,
-             count(*) OVER (PARTITION BY event_type) AS cnt
-      FROM daily
-    ), med AS (
-      SELECT event_type, max(CASE WHEN rn = (cnt + 1) // 2 THEN x END) AS med
-      FROM ranked GROUP BY event_type
-    ), signs AS (
-      SELECT d.event_type, d.day,
-             CASE WHEN d.x > m.med THEN 1 ELSE 0 END AS s
-      FROM daily d JOIN med m ON m.event_type = d.event_type
-      WHERE d.x <> m.med
-    ), runs AS (
-      SELECT event_type, s,
-             CASE WHEN s <> lag(s) OVER (PARTITION BY event_type ORDER BY day)
-                  THEN 1 ELSE 0 END AS chg
-      FROM signs
-    ), a AS (
-      SELECT event_type,
-             CAST(count(*) AS BIGINT) AS n_eff,
-             CAST(sum(s) AS BIGINT) AS n_above,
-             CAST(count(*) - sum(s) AS BIGINT) AS n_below,
-             CAST(sum(chg) + 1 AS BIGINT) AS n_runs
-      FROM runs GROUP BY event_type)
-    SELECT event_type, n_eff, n_above, n_below, n_runs,
-           CASE WHEN n_above > 0 AND n_below > 0
-                     AND 2.0 * n_above * n_below > n_above + n_below
-                     AND n_above + n_below > 1 THEN
-             CAST(floor(({z}) * 1000000.0 + 0.5) AS BIGINT) / 1000000.0
-           END AS z
-    FROM a
-    """
-
-
-@register("events_runs_test_daily", oracle=_runs_oracle())
-def events_runs_test_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Wald–Wolfowitz runs test per event type: is the daily value
-    series' above/below-median sequence random, or does it trend/
-    oscillate? (Too few runs = level persistence / drift; too many =
-    alternation.) The independence audit that complements the CUSUM
-    change-point and ACF queries on the same daily series.
-
-    The median is the lower order statistic ((n+1)//2-th) from a
-    per-type rank window — integer-exact, no percentile interpolation;
-    tie days (x = median) are excluded per the standard construction.
-    Runs count is a lag window over the calendar-bounded per-type
-    series. n_above/n_below/n_runs are exact integers; z is one
-    identical IEEE expression off them (sqrt is correctly rounded),
-    NULL for degenerate one-sided series (fuzz hits this).
-    """
-    t = Tables(spark, sf_dir)
-    daily = (
-        t.events.select(
-            "event_type",
-            F.to_date(F.col("ts")).alias("day"),
-            F.floor(F.col("value") * F.lit(1e6) + F.lit(0.5)).cast("long").alias("v_u"),
-        )
-        .groupBy("event_type", "day")
-        .agg(F.sum("v_u").alias("x"))
-    )
-    wp = Window.partitionBy("event_type")
-    ranked = daily.select(
-        "event_type",
-        "day",
-        "x",
-        F.row_number().over(wp.orderBy("x", "day")).alias("rn"),
-        F.count(F.lit(1)).over(wp).alias("cnt"),
-    )
-    kth = (F.col("cnt") + 1 - (F.col("cnt") + 1) % 2) / 2
-    med = ranked.groupBy("event_type").agg(
-        F.max(F.when(F.col("rn") == kth.cast("long"), F.col("x"))).alias("med")
-    )
-    signs = (
-        daily.join(F.broadcast(med), "event_type")
-        .where(F.col("x") != F.col("med"))
-        .select(
-            "event_type", "day", F.when(F.col("x") > F.col("med"), 1).otherwise(0).alias("s")
-        )
-    )
-    lag_s = F.lag("s").over(wp.orderBy("day"))
-    runs = signs.select(
-        "event_type",
-        "s",
-        F.when(F.col("s") != lag_s, 1).otherwise(0).alias("chg"),
-    )
-    a = runs.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n_eff"),
-        F.sum("s").cast("long").alias("n_above"),
-        (F.count(F.lit(1)) - F.sum("s")).cast("long").alias("n_below"),
-        (F.sum("chg") + 1).cast("long").alias("n_runs"),
-    )
-    na, nb = F.col("n_above"), F.col("n_below")
-    nn = na + nb
-    z = (
-        F.col("n_runs").cast("double")
-        - (F.lit(1.0) + F.lit(2.0) * na * nb / nn)
-    ) / F.sqrt(
-        F.lit(2.0) * na * nb * (F.lit(2.0) * na * nb - na - nb)
-        / ((F.lit(1.0) * nn) * nn * (nn - 1))
-    )
-    return a.select(
-        "event_type",
-        "n_eff",
-        "n_above",
-        "n_below",
-        "n_runs",
-        F.when(
-            (na > 0) & (nb > 0) & (F.lit(2.0) * na * nb > nn) & (nn > 1),
-            F.floor(z * F.lit(1e6) + F.lit(0.5)).cast("long") / F.lit(1e6),
-        ).alias("z"),
-    )
-
-# ---------------------------------------------------------------------------
-# 11. Hour-of-day entropy profile per event type (det-ln)
-# ---------------------------------------------------------------------------
-
-# ln(24) at dp=9 via the deterministic fixed-point ln — the identical
-# constant both engines would compute; embedded as a literal.
-_LN24_NANO = 3_178_053_830
-
-
-def _hourly_entropy_oracle() -> str:
-    from ..functions.detmath import sql_det_ln_steps
-    from ..functions.exact import sql_round_big_int_ratio
-
-    return f"""
-    WITH hist AS (
-      SELECT event_type, extract(hour FROM ts) AS hr,
-             CAST(count(*) AS BIGINT) AS n_h
-      FROM events GROUP BY 1, 2
-    ), {sql_det_ln_steps('hist', 'n_h', 'ln_nh', 9)},
-    tot AS (
-      SELECT event_type, CAST(sum(n_h) AS BIGINT) AS n_events,
-             CAST(count(*) AS BIGINT) AS n_active_hours,
-             sum(n_h::HUGEINT * ln_nh) AS s_nln
-      FROM ln_nh_rel GROUP BY event_type
-    ), {sql_det_ln_steps('tot', 'n_events', 'ln_n', 9)}
-    SELECT event_type, n_events, n_active_hours,
-           {sql_round_big_int_ratio(
-               'n_events::HUGEINT * ln_n - s_nln',
-               'n_events::HUGEINT * 1000000000', 6)} AS entropy_nats,
-           {sql_round_big_int_ratio(
-               'n_events::HUGEINT * ln_n - s_nln',
-               f'n_events::HUGEINT * {_LN24_NANO}', 6)} AS entropy_ratio
-    FROM ln_n_rel
-    """
-
-
-@register("events_hourly_entropy_profile", oracle=_hourly_entropy_oracle())
-def events_hourly_entropy_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shannon entropy of each event type's hour-of-day distribution
-    (nats, plus the ratio to the ln(24) uniform maximum) — the
-    "is this feed diurnal or flat" profile a stream monitor keys
-    alerting thresholds on; near-0 ratio = single-hour spike traffic,
-    near-1 = uniform.
-
-    H = ln(N) - (1/N) sum_h n_h ln(n_h), evaluated with the
-    deterministic fixed-point ln (detmath, dp=9) on the BOUNDED
-    |types| x 24 histogram — never per event row (the §5e det-ln
-    domain discipline); ln(24) is a compile-time constant from the
-    same construction. All sums exact decimal; both outputs exact
-    half-up ratios.
-    """
-    from ..functions.detmath import det_ln_q
-    from ..functions.exact import round_big_int_ratio
-
-    t = Tables(spark, sf_dir)
-    hist = (
-        t.events.select("event_type", F.hour("ts").alias("hr"))
-        .groupBy("event_type", "hr")
-        .agg(F.count(F.lit(1)).alias("n_h"))
-    )
-    ln_nh = hist.withColumn("ln_nh", det_ln_q(F.col("n_h"), 9))
-    tot = ln_nh.groupBy("event_type").agg(
-        F.sum("n_h").alias("n_events"),
-        F.count(F.lit(1)).alias("n_active_hours"),
-        F.sum(dec38(F.col("n_h")) * F.col("ln_nh")).alias("s_nln"),
-    )
-    out = tot.withColumn("ln_n", det_ln_q(F.col("n_events"), 9))
-    num = dec38(F.col("n_events")) * F.col("ln_n") - F.col("s_nln")
-    return out.select(
-        "event_type",
-        "n_events",
-        "n_active_hours",
-        round_big_int_ratio(num, dec38(F.col("n_events")) * F.lit(1_000_000_000), 6).alias(
-            "entropy_nats"
-        ),
-        round_big_int_ratio(num, dec38(F.col("n_events")) * F.lit(_LN24_NANO), 6).alias(
-            "entropy_ratio"
         ),
     )
 

@@ -24,6 +24,10 @@ and ``stats_mood_median_discount`` live in ``operators/stats_rank.py``;
 ``operators/stats_dist.py``; ``stats_grubbs_acctbal_nation`` and
 ``stats_ols_influence_daily`` live in ``operators/stats_models.py`` with
 the other stats queries.
+
+``events_markov_stationary`` lives in ``operators/events_sequence.py``;
+``events_changepoint_pettitt`` and ``events_seasonal_strength`` live in
+``operators/events_series.py`` with the other events queries.
 """
 
 from __future__ import annotations
@@ -243,108 +247,6 @@ def dedup_minhash_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# 7. Seasonal strength of hourly traffic per event type (hour-of-day eta^2)
-# ---------------------------------------------------------------------------
-
-
-def _seasonal_strength_oracle() -> str:
-    return """
-    WITH cells AS (
-      SELECT event_type, CAST(ts AS DATE) AS d, extract(hour FROM ts) AS h,
-             CAST(count(*) AS BIGINT) AS n_dh
-      FROM events GROUP BY 1, 2, 3
-    ), per_hour AS (
-      SELECT event_type, h,
-             CAST(count(*) AS BIGINT) AS c_h,
-             CAST(sum(n_dh) AS BIGINT) AS s_h
-      FROM cells GROUP BY 1, 2
-    ), hterms AS (
-      SELECT event_type,
-             CAST(floor(CAST(s_h AS DOUBLE) * s_h / c_h * 1000000.0 + 0.5)
-                  AS BIGINT) AS t_u
-      FROM per_hour
-    ), hsum AS (
-      SELECT event_type, CAST(sum(t_u) AS BIGINT) AS sb_u
-      FROM hterms GROUP BY event_type
-    ), tot AS (
-      SELECT event_type,
-             CAST(count(*) AS BIGINT) AS c,
-             CAST(sum(n_dh) AS BIGINT) AS t1,
-             CAST(sum(n_dh::HUGEINT * n_dh) AS HUGEINT) AS t2
-      FROM cells GROUP BY event_type
-    )
-    SELECT t.event_type, t.t1 AS n_events, t.c AS n_cells,
-           CASE WHEN CAST(t.t2 AS DOUBLE)
-                     - CAST(t.t1 AS DOUBLE) * t.t1 / t.c > 0.0 THEN
-             CAST(floor((CAST(h.sb_u AS DOUBLE) / 1000000.0
-                         - CAST(t.t1 AS DOUBLE) * t.t1 / t.c)
-                        / (CAST(t.t2 AS DOUBLE)
-                           - CAST(t.t1 AS DOUBLE) * t.t1 / t.c)
-                        * 1000000.0 + 0.5) AS BIGINT) / 1000000.0
-           END AS seasonal_strength
-    FROM tot t JOIN hsum h USING (event_type)
-    """
-
-
-@register("events_seasonal_strength", oracle=_seasonal_strength_oracle())
-def events_seasonal_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Strength of the hour-of-day seasonality per event type: the
-    share of hourly-cell count variance explained by the hour-of-day
-    profile (one-way eta^2 of hour on (date, hour) cell counts; 0 =
-    flat feed, ->1 = traffic fully determined by time of day) — the
-    scalar companion of ``events_seasonal_hourly_baseline`` a monitor
-    can threshold to decide whether the seasonal baseline is even
-    worth subtracting.
-
-    Identity used: SS_between/SS_total with SS_between = sum_h S_h^2 /
-    C_h - T1^2/C and SS_total = T2 - T1^2/C, all from exact integer
-    cell aggregates (observed cells only; absent hours are structural
-    zeros a gap-fill would add — documented choice shared with the
-    burstiness op). Per-hour quotients quantize half-up to micro units
-    and sum as integers, so both engines add identical values in any
-    order. Bounded domains end-to-end after one partial-aggregated
-    scan: |types| x dates x 24 cells, then |types| x 24.
-    """
-    t = Tables(spark, sf_dir)
-    cells = (
-        t.events.select(
-            "event_type", F.to_date("ts").alias("d"), F.hour("ts").alias("h")
-        )
-        .groupBy("event_type", "d", "h")
-        .agg(F.count(F.lit(1)).alias("n_dh"))
-    )
-    per_hour = cells.groupBy("event_type", "h").agg(
-        F.count(F.lit(1)).alias("c_h"), F.sum("n_dh").alias("s_h")
-    )
-    t_u = F.floor(
-        F.col("s_h").cast("double") * F.col("s_h") / F.col("c_h") * F.lit(1e6)
-        + F.lit(0.5)
-    ).cast("long")
-    hsum = per_hour.select("event_type", t_u.alias("t_u")).groupBy("event_type").agg(
-        F.sum("t_u").alias("sb_u")
-    )
-    tot = cells.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("c"),
-        F.sum("n_dh").alias("t1"),
-        F.sum(dec38(F.col("n_dh")) * F.col("n_dh")).alias("t2"),
-    )
-    j = tot.join(hsum, "event_type")
-    t1d = F.col("t1").cast("double")
-    grand = t1d * F.col("t1") / F.col("c")
-    den = F.col("t2").cast("double") - grand
-    num = F.col("sb_u").cast("double") / F.lit(1e6) - grand
-    return j.select(
-        "event_type",
-        F.col("t1").alias("n_events"),
-        F.col("c").alias("n_cells"),
-        F.when(
-            den > F.lit(0.0),
-            F.floor(num / den * F.lit(1e6) + F.lit(0.5)).cast("long") / F.lit(1e6),
-        ).alias("seasonal_strength"),
-    )
-
-
-# ---------------------------------------------------------------------------
 # 10. Vocabulary coverage curve (top-k token share, count-of-counts route)
 # ---------------------------------------------------------------------------
 
@@ -471,134 +373,6 @@ def text_vocab_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# 12. Markov stationary distribution of user event-type transitions
-# ---------------------------------------------------------------------------
-
-MARKOV_ITERS = 15
-MARKOV_SCALE = 1_000_000  # probability micro-units
-
-
-def _markov_oracle() -> str:
-    parts = [
-        f"""
-    WITH seq AS (
-      SELECT user_id, event_type,
-             lead(event_type) OVER (PARTITION BY user_id
-                                    ORDER BY ts, event_id) AS nxt
-      FROM events
-    ), trans AS (
-      SELECT event_type AS src, nxt AS dst, CAST(count(*) AS BIGINT) AS c
-      FROM seq WHERE nxt IS NOT NULL GROUP BY 1, 2
-    ), rows_t AS (
-      SELECT src, CAST(sum(c) AS BIGINT) AS r FROM trans GROUP BY src
-    ), pm AS (
-      SELECT t.src, t.dst, ({MARKOV_SCALE}::BIGINT * t.c) // rt.r AS p_u
-      FROM trans t JOIN rows_t rt USING (src)
-    ), states AS (
-      SELECT src AS state FROM rows_t
-    ), ns AS (
-      SELECT CAST(count(*) AS BIGINT) AS n_states FROM states
-    ), pi0 AS MATERIALIZED (
-      SELECT state, {MARKOV_SCALE}::BIGINT // ns.n_states AS pi_u
-      FROM states, ns
-    )"""
-    ]
-    prev = "pi0"
-    for i in range(1, MARKOV_ITERS + 1):
-        parts.append(
-            f"""
-    , pi{i} AS MATERIALIZED (
-      SELECT p.dst AS state,
-             CAST(sum(q.pi_u * p.p_u) // {MARKOV_SCALE} AS BIGINT) AS pi_u
-      FROM pm p JOIN {prev} q ON q.state = p.src
-      GROUP BY p.dst
-    )"""
-        )
-        prev = f"pi{i}"
-    parts.append(
-        f"""
-    SELECT state AS event_type, pi_u AS stationary_micro,
-           CAST(pi_u AS DOUBLE) / {MARKOV_SCALE}.0 AS stationary
-    FROM {prev}
-    """
-    )
-    return "".join(parts)
-
-
-@register("events_markov_stationary", oracle=_markov_oracle())
-def events_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stationary distribution of the per-user event-type transition
-    chain (15 power iterations from uniform) — where
-    ``events_user_path_transitions`` reports one-step probabilities,
-    this answers the product question "which state does a user
-    session spend its long-run time in".
-
-    Arithmetic is INTEGER end to end (the pagerank discipline,
-    hardened): transition probabilities quantize once to micro units
-    (1e6 c_ij // r_i), and each iteration is pi'_j = sum_i pi_i *
-    p_ij // 1e6 — exact int64 products (<= 1e12), exact integer sums,
-    no floating point anywhere until the final display division, so
-    both engines run bit-identical chains with NO trunc-of-double
-    step at all. The chain runs on the |types|^2 aggregated matrix
-    (bounded, broadcast-joined); the only row-scaled work is the
-    per-user lead() window (partitioned by user — the sessionization
-    shuffle every sequence op in the family already pays) and one
-    partial-aggregated count.
-    """
-    t = Tables(spark, sf_dir)
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    seq = t.events.select(
-        "user_id", "event_type", F.lead("event_type").over(w).alias("nxt")
-    )
-    trans = (
-        seq.filter(F.col("nxt").isNotNull())
-        .groupBy(F.col("event_type").alias("src"), F.col("nxt").alias("dst"))
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    rows_t = trans.groupBy("src").agg(F.sum("c").alias("r"))
-    pm = (
-        trans.join(F.broadcast(rows_t), "src")
-        .select(
-            "src",
-            "dst",
-            ((F.lit(MARKOV_SCALE) * F.col("c")) - (F.lit(MARKOV_SCALE) * F.col("c")) % F.col("r"))
-            .cast("long")
-            .alias("num"),
-            "r",
-        )
-        .select("src", "dst", (F.col("num") / F.col("r")).cast("long").alias("p_u"))
-        .localCheckpoint(eager=False)
-    )
-    ns = rows_t.agg(F.count(F.lit(1)).alias("n_states"))
-    pi = rows_t.join(F.broadcast(ns)).select(
-        F.col("src").alias("state"),
-        (
-            (F.lit(MARKOV_SCALE) - F.lit(MARKOV_SCALE) % F.col("n_states"))
-            / F.col("n_states")
-        )
-        .cast("long")
-        .alias("pi_u"),
-    )
-    for _ in range(MARKOV_ITERS):
-        acc = (
-            pm.join(F.broadcast(pi), F.col("state") == F.col("src"))
-            .groupBy("dst")
-            .agg(F.sum(F.col("pi_u") * F.col("p_u")).alias("s"))
-        )
-        pi = acc.select(
-            F.col("dst").alias("state"),
-            ((F.col("s") - F.col("s") % F.lit(MARKOV_SCALE)) / F.lit(MARKOV_SCALE))
-            .cast("long")
-            .alias("pi_u"),
-        )
-    return pi.select(
-        F.col("state").alias("event_type"),
-        F.col("pi_u").alias("stationary_micro"),
-        (F.col("pi_u").cast("double") / F.lit(float(MARKOV_SCALE))).alias("stationary"),
-    )
-
-
-# ---------------------------------------------------------------------------
 # 13. Dense-key gap audit over order keys
 # ---------------------------------------------------------------------------
 
@@ -657,117 +431,6 @@ def dq_orderkey_gap_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("n_keys").alias("n_keys"),
         F.sum(gap).alias("missing_in_span"),
         F.max(gap).alias("worst_bucket_gap"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# 15. Pettitt change-point test on daily event counts
-# ---------------------------------------------------------------------------
-
-
-def _pettitt_oracle() -> str:
-    return """
-    WITH daily AS (
-      SELECT event_type, CAST(ts AS DATE) AS d,
-             CAST(count(*) AS BIGINT) AS v
-      FROM events GROUP BY 1, 2
-    ), vals AS (
-      SELECT event_type, v, CAST(count(*) AS BIGINT) AS cnt
-      FROM daily GROUP BY 1, 2
-    ), rv AS (
-      SELECT event_type, v, cnt,
-             coalesce(sum(cnt) OVER (PARTITION BY event_type ORDER BY v
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cum_lt
-      FROM vals
-    ), ranked AS (
-      SELECT d.event_type, d.d,
-             2 * r.cum_lt + r.cnt + 1 AS r2
-      FROM daily d JOIN rv r ON d.event_type = r.event_type AND d.v = r.v
-    ), nn AS (
-      SELECT event_type, CAST(count(*) AS BIGINT) AS n_days
-      FROM ranked GROUP BY event_type
-    ), u AS (
-      SELECT r.event_type, r.d,
-             sum(r.r2) OVER (PARTITION BY r.event_type ORDER BY r.d)
-               - CAST(row_number() OVER (PARTITION BY r.event_type ORDER BY r.d)
-                      AS BIGINT) * (n.n_days + 1) AS u2
-      FROM ranked r JOIN nn n USING (event_type)
-    ), mx AS (
-      SELECT event_type, CAST(max(abs(u2)) AS BIGINT) AS k2
-      FROM u GROUP BY event_type
-    )
-    SELECT m.event_type, n.n_days,
-           CAST(m.k2 AS DOUBLE) / 2.0 AS k_stat,
-           strftime(min(u.d), '%Y-%m-%d') AS change_date
-    FROM mx m JOIN nn n USING (event_type)
-    JOIN u ON u.event_type = m.event_type AND abs(u.u2) = m.k2
-    GROUP BY m.event_type, n.n_days, m.k2
-    """
-
-
-@register("events_changepoint_pettitt", oracle=_pettitt_oracle())
-def events_changepoint_pettitt(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pettitt rank change-point test per event type: K = max_t |U_t|
-    over the daily count series, with the earliest date attaining the
-    maximum as the estimated change point — the nonparametric
-    complement of ``events_cusum_changepoint`` (CUSUM assumes a mean
-    scale; Pettitt is rank-based, so a level shift is detected
-    identically under any monotone transform of volume).
-
-    Identity used: with midranks, U_t = sum_{i<=t} R_i * 2/2 -
-    t(n+1)/2 — doubled throughout (2R via the 2*cum+cnt+1 tie trick,
-    as in Mann-Whitney/Kruskal-Wallis) so every intermediate is an
-    exact integer and K halves only at display time. Both windows
-    partition by event type over the CALENDAR-bounded daily table
-    (never raw events): the rank window runs over distinct daily
-    values, the cumulative over dates; the argmax date resolves by an
-    exact integer equality join, min-date tie-break. Row-scaled work
-    is one partial-aggregated scan.
-    """
-    t = Tables(spark, sf_dir)
-    daily = (
-        t.events.select("event_type", F.to_date("ts").alias("d"))
-        .groupBy("event_type", "d")
-        .agg(F.count(F.lit(1)).alias("v"))
-    )
-    vals = daily.groupBy("event_type", "v").agg(F.count(F.lit(1)).alias("cnt"))
-    wv = (
-        Window.partitionBy("event_type")
-        .orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    rv = vals.select(
-        "event_type",
-        "v",
-        "cnt",
-        F.coalesce(F.sum("cnt").over(wv), F.lit(0)).alias("cum_lt"),
-    )
-    ranked = daily.join(rv, ["event_type", "v"]).select(
-        "event_type", "d", (2 * F.col("cum_lt") + F.col("cnt") + 1).alias("r2")
-    )
-    nn = ranked.groupBy("event_type").agg(F.count(F.lit(1)).alias("n_days"))
-    wd = Window.partitionBy("event_type").orderBy("d")
-    u = ranked.join(nn, "event_type").select(
-        "event_type",
-        "d",
-        (
-            F.sum("r2").over(wd.rowsBetween(Window.unboundedPreceding, 0))
-            - F.row_number().over(wd).cast("long") * (F.col("n_days") + 1)
-        ).alias("u2"),
-    )
-    mx = u.groupBy("event_type").agg(F.max(F.abs(F.col("u2"))).alias("k2"))
-    out = (
-        mx.join(nn, "event_type")
-        .join(u, "event_type")
-        .filter(F.abs(F.col("u2")) == F.col("k2"))
-        .groupBy("event_type", "n_days", "k2")
-        .agg(F.min("d").alias("change_d"))
-    )
-    return out.select(
-        "event_type",
-        "n_days",
-        (F.col("k2").cast("double") / F.lit(2.0)).alias("k_stat"),
-        F.date_format(F.col("change_d"), "yyyy-MM-dd").alias("change_date"),
     )
 
 

@@ -18,6 +18,11 @@ release, and a last-digit preference audit.
 in ``operators/stats_models.py``; ``stats_fligner_policello_status``,
 ``stats_k_sample_median_test`` and ``stats_sign_test_daily_pair`` live
 in ``operators/stats_rank.py`` with the other stats queries.
+
+``events_absorbing_markov_steps`` lives in
+``operators/events_sequence.py``; ``events_bass_diffusion_fit`` and
+``events_granger_lag1_test`` live in ``operators/events_series.py`` with
+the other events queries.
 """
 
 from __future__ import annotations
@@ -29,364 +34,6 @@ from pyspark.sql.window import Window
 from ..functions.exact import dec38, halfup_div, order_cents, sql_halfup_div
 from ..registry import register
 from ..tables import Tables
-
-
-# ---------------------------------------------------------------------------
-# 1. Discrete Bass diffusion fit on cumulative signups
-# ---------------------------------------------------------------------------
-
-BASS_SCALE_SHIFT = 6  # cumulative adopters scaled by >>6 for det headroom
-
-
-def _bass_oracle() -> str:
-    from ..functions.exact import sql_round_big_int_ratio
-
-    sh = BASS_SCALE_SHIFT
-    return f"""
-    WITH daily AS (
-      SELECT CAST(ts AS DATE) AS d, CAST(count(*) AS BIGINT) AS s
-      FROM events WHERE event_type = 'signup' GROUP BY 1
-    ), idx AS (
-      SELECT a.d, a.s, CAST(count(*) AS BIGINT) AS k
-      FROM daily a JOIN daily b ON b.d <= a.d
-      GROUP BY a.d, a.s
-    ), cum AS (
-      SELECT k, s, CAST(sum(s) OVER (ORDER BY k) - s AS BIGINT) AS nprev
-      FROM idx
-    ), xy AS (
-      SELECT s AS y, nprev >> {sh} AS x1,
-             (nprev >> {sh}) * (nprev >> {sh}) AS x2
-      FROM cum WHERE k > 1
-    ), m AS (
-      SELECT CAST(count(*) AS HUGEINT) AS n,
-             CAST(sum(x1) AS HUGEINT) AS s1, CAST(sum(x2) AS HUGEINT) AS s2,
-             CAST(sum(x1::HUGEINT * x1) AS HUGEINT) AS s11,
-             CAST(sum(x1::HUGEINT * x2) AS HUGEINT) AS s12,
-             CAST(sum(x2::HUGEINT * x2) AS HUGEINT) AS s22,
-             CAST(sum(y) AS HUGEINT) AS sy,
-             CAST(sum(x1::HUGEINT * y) AS HUGEINT) AS sy1,
-             CAST(sum(x2::HUGEINT * y) AS HUGEINT) AS sy2
-      FROM xy
-    ), det AS (
-      SELECT n,
-             n*(s11*s22 - s12*s12) - s1*(s1*s22 - s12*s2)
-               + s2*(s1*s12 - s11*s2) AS dd,
-             sy*(s11*s22 - s12*s12) - s1*(sy1*s22 - s12*sy2)
-               + s2*(sy1*s12 - s11*sy2) AS da,
-             n*(sy1*s22 - sy2*s12) - sy*(s1*s22 - s12*s2)
-               + s2*(s1*sy2 - sy1*s2) AS db,
-             n*(s11*sy2 - s12*sy1) - s1*(s1*sy2 - sy1*s2)
-               + sy*(s1*s12 - s11*s2) AS dc
-      FROM m
-    )
-    SELECT CAST(n AS BIGINT) AS n_days,
-           {sql_round_big_int_ratio('da', 'dd')} AS coef_a,
-           {sql_round_big_int_ratio('db', 'dd')} AS coef_b,
-           {sql_round_big_int_ratio('dc', 'dd')} AS coef_c
-    FROM det WHERE dd <> 0
-    """
-
-
-@register("events_bass_diffusion_fit", _bass_oracle())
-def events_bass_diffusion_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Discrete Bass diffusion fit of daily signups: regress new
-    adopters S_t on cumulative prior adoption N_{t−1} and N_{t−1}² —
-    the Bass identity S_t = pM + (q−p)N − (q/M)N², so the fitted
-    (a, b, c) recover innovation p, imitation q and market size M.
-    The adoption-curve member of the product-analytics family (the
-    retention-decay fit models leaving; this models arriving).
-
-    Exact path: a 3-regressor OLS solved by Cramer determinants over
-    the 3×3 normal-equation matrix — every entry an exact integer sum,
-    each coefficient one round_big_int_ratio of two 128-bit
-    determinants. Cumulative adoption is pre-scaled by a FIXED >>6
-    (identically in both engines) so the degree-6 determinant terms
-    stay ≲ 10³² at sf1×10 instead of overflowing decimal(38) — a
-    constant rescale of x1/x2 that only rescales b and c, documented
-    in the coefficient semantics (b, c are per-64-adopters units).
-
-    Scale shape: fact scan partial-aggregates to the ~30-row signup
-    calendar; the rank comes from the house broadcast non-equi
-    self-join; the single ordered cumulative runs over that bounded
-    POST-AGGREGATION spine (same class as stats_ljung_box_daily's
-    allowlist entry — here it collapses into the scalar aggregate).
-    """
-    from ..functions.exact import round_big_int_ratio
-
-    sh = BASS_SCALE_SHIFT
-    t = Tables(spark, sf_dir)
-    daily = t.events.filter(F.col("event_type") == "signup").groupBy(
-        F.to_date("ts").alias("d")
-    ).agg(F.count(F.lit(1)).alias("s"))
-    b0 = daily.select(F.col("d").alias("d_b"))
-    idx = (
-        daily.join(F.broadcast(b0), F.col("d_b") <= F.col("d"))
-        .groupBy("d", "s")
-        .agg(F.count(F.lit(1)).alias("k"))
-    )
-    # nprev via a second bounded non-equi self-join (strictly-earlier
-    # ranks), keeping the plan window-free
-    ib = idx.select(F.col("k").alias("k_b"), F.col("s").alias("s_b"))
-    cum = (
-        idx.join(F.broadcast(ib), F.col("k_b") < F.col("k"), "left")
-        .groupBy("k", "s")
-        .agg(F.coalesce(F.sum("s_b"), F.lit(0)).alias("nprev"))
-    )
-    x1 = (F.col("nprev") / F.lit(1 << sh)).cast("long")
-    xy = cum.filter(F.col("k") > 1).select(
-        F.col("s").alias("y"), x1.alias("x1")
-    ).withColumn("x2", F.col("x1") * F.col("x1"))
-    m = xy.agg(
-        dec38(F.count(F.lit(1))).alias("n"),
-        dec38(F.sum("x1")).alias("s1"),
-        dec38(F.sum("x2")).alias("s2"),
-        F.sum(dec38(F.col("x1")) * dec38(F.col("x1"))).alias("s11"),
-        F.sum(dec38(F.col("x1")) * dec38(F.col("x2"))).alias("s12"),
-        F.sum(dec38(F.col("x2")) * dec38(F.col("x2"))).alias("s22"),
-        dec38(F.sum("y")).alias("sy"),
-        F.sum(dec38(F.col("x1")) * dec38(F.col("y"))).alias("sy1"),
-        F.sum(dec38(F.col("x2")) * dec38(F.col("y"))).alias("sy2"),
-    )
-    n, s1, s2 = F.col("n"), F.col("s1"), F.col("s2")
-    s11, s12, s22 = F.col("s11"), F.col("s12"), F.col("s22")
-    sy, sy1, sy2 = F.col("sy"), F.col("sy1"), F.col("sy2")
-    det = m.select(
-        n.alias("n"),
-        (
-            n * (s11 * s22 - s12 * s12)
-            - s1 * (s1 * s22 - s12 * s2)
-            + s2 * (s1 * s12 - s11 * s2)
-        ).alias("dd"),
-        (
-            sy * (s11 * s22 - s12 * s12)
-            - s1 * (sy1 * s22 - s12 * sy2)
-            + s2 * (sy1 * s12 - s11 * sy2)
-        ).alias("da"),
-        (
-            n * (sy1 * s22 - sy2 * s12)
-            - sy * (s1 * s22 - s12 * s2)
-            + s2 * (s1 * sy2 - sy1 * s2)
-        ).alias("db"),
-        (
-            n * (s11 * sy2 - s12 * sy1)
-            - s1 * (s1 * sy2 - sy1 * s2)
-            + sy * (s1 * s12 - s11 * s2)
-        ).alias("dc"),
-    )
-    return det.filter(F.col("dd") != 0).select(
-        F.col("n").cast("long").alias("n_days"),
-        round_big_int_ratio(F.col("da"), F.col("dd")).alias("coef_a"),
-        round_big_int_ratio(F.col("db"), F.col("dd")).alias("coef_b"),
-        round_big_int_ratio(F.col("dc"), F.col("dd")).alias("coef_c"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# 2. Granger-style lag-1 regression comparison (view -> purchase)
-# ---------------------------------------------------------------------------
-
-
-def _granger_oracle() -> str:
-    from ..functions.exact import sql_round_big_int_ratio
-
-    return f"""
-    WITH days AS (
-      SELECT DISTINCT CAST(ts AS DATE) AS d FROM events
-    ), cx AS (
-      SELECT CAST(ts AS DATE) AS d, CAST(count(*) AS BIGINT) AS c
-      FROM events WHERE event_type = 'view' GROUP BY 1
-    ), cy AS (
-      SELECT CAST(ts AS DATE) AS d, CAST(count(*) AS BIGINT) AS c
-      FROM events WHERE event_type = 'purchase' GROUP BY 1
-    ), filled AS (
-      SELECT days.d, coalesce(cx.c, 0) AS x, coalesce(cy.c, 0) AS y
-      FROM days LEFT JOIN cx ON cx.d = days.d LEFT JOIN cy ON cy.d = days.d
-    ), idx AS (
-      SELECT a.d, a.x, a.y, CAST(count(*) AS BIGINT) AS k
-      FROM filled a JOIN filled b ON b.d <= a.d
-      GROUP BY a.d, a.x, a.y
-    ), rows_ AS (
-      SELECT a.y AS y, b.y AS x1, b.x AS x2
-      FROM idx a JOIN idx b ON b.k = a.k - 1
-    ), m AS (
-      SELECT CAST(count(*) AS HUGEINT) AS n,
-             CAST(sum(x1) AS HUGEINT) AS s1, CAST(sum(x2) AS HUGEINT) AS s2,
-             CAST(sum(x1::HUGEINT * x1) AS HUGEINT) AS s11,
-             CAST(sum(x1::HUGEINT * x2) AS HUGEINT) AS s12,
-             CAST(sum(x2::HUGEINT * x2) AS HUGEINT) AS s22,
-             CAST(sum(y) AS HUGEINT) AS sy,
-             CAST(sum(x1::HUGEINT * y) AS HUGEINT) AS sy1,
-             CAST(sum(x2::HUGEINT * y) AS HUGEINT) AS sy2,
-             CAST(sum(y::HUGEINT * y) AS HUGEINT) AS syy
-      FROM rows_
-    ), fits AS (
-      SELECT n, syy, sy, sy1, sy2,
-             -- restricted: y ~ 1 + x1 (own lag only)
-             n * s11 - s1 * s1 AS dr,
-             (n * sy1 - s1 * sy) AS br_num,
-             -- unrestricted 3x3 Cramer determinants
-             n*(s11*s22 - s12*s12) - s1*(s1*s22 - s12*s2)
-               + s2*(s1*s12 - s11*s2) AS dd,
-             sy*(s11*s22 - s12*s12) - s1*(sy1*s22 - s12*sy2)
-               + s2*(sy1*s12 - s11*sy2) AS da,
-             n*(sy1*s22 - sy2*s12) - sy*(s1*s22 - s12*s2)
-               + s2*(s1*sy2 - sy1*s2) AS db,
-             n*(s11*sy2 - s12*sy1) - s1*(s1*sy2 - sy1*s2)
-               + sy*(s1*s12 - s11*s2) AS dc
-      FROM m
-    ), ssr AS (
-      -- centered R^2 identities in cleared-denominator integer space:
-      -- restricted  R^2 = br_num^2 / (tss_n * dr)
-      -- unrestricted R^2 = (n * beta'X'y * D - Sy^2 * D) / (tss_n * D)
-      --   with beta*D = (da, db, dc)
-      SELECT n,
-             (n * syy - sy * sy) AS tss_n,
-             br_num * br_num AS expl_r_scaled,
-             dr, dd,
-             n * (da * sy + db * sy1 + dc * sy2) - sy * sy * dd
-               AS expl_u_scaled
-      FROM fits
-    )
-    SELECT CAST(n AS BIGINT) AS n_pairs,
-           {sql_round_big_int_ratio('expl_r_scaled', 'tss_n * dr')}
-             AS r2_restricted,
-           {sql_round_big_int_ratio('expl_u_scaled', 'tss_n * dd')}
-             AS r2_unrestricted
-    FROM ssr
-    WHERE tss_n > 0 AND dr > 0 AND dd > 0
-    """
-
-
-@register("events_granger_lag1_test", _granger_oracle())
-def events_granger_lag1_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Granger-style lag-1 predictability comparison: does yesterday's
-    VIEW count improve the prediction of today's PURCHASE count beyond
-    yesterday's purchases alone? Reports R² of the restricted model
-    (purchases ~ own lag) and the unrestricted one (+ view lag) — the
-    regression-based causality screen completing the lead-lag pair
-    with events_ccf_types_lags (CCF is bivariate symmetric; Granger
-    conditions on the own-lag).
-
-    Exactness: both R² values are exact integer ratios. Restricted:
-    R² = (nSxy − SxSy)²/((nSxx − Sx²)(nSyy − Sy²)). Unrestricted: from
-    the 3×3 Cramer solution β·D = (Dα, Dβ1, Dβ2), explained sum of
-    squares obeys R² = (n·βᵀX'y·D − Sy²·D²)/((nSyy − Sy²)·D²) — every
-    term an exact 128-bit integer, one round_big_int_ratio each
-    (|terms| ≲ 10³⁰ at sf1×10 over the 30-day grid). Zero-variance
-    series empty the output identically on both engines.
-
-    Scale shape: identical to the CCF op — per-(type, day) partial
-    aggregation, calendar-bounded spine, broadcast rank join, lag-1
-    rank equi-join; the regression is a scalar aggregate.
-    """
-    from ..functions.exact import round_big_int_ratio
-
-    t = Tables(spark, sf_dir)
-    ev = t.events.select(F.to_date("ts").alias("d"), "event_type")
-    days = ev.select("d").distinct()
-    cx = (
-        ev.filter(F.col("event_type") == "view")
-        .groupBy("d")
-        .agg(F.count(F.lit(1)).alias("cx"))
-    )
-    cy = (
-        ev.filter(F.col("event_type") == "purchase")
-        .groupBy("d")
-        .agg(F.count(F.lit(1)).alias("cy"))
-    )
-    filled = (
-        days.join(cx, "d", "left")
-        .join(cy, "d", "left")
-        .select(
-            "d",
-            F.coalesce(F.col("cx"), F.lit(0)).alias("x"),
-            F.coalesce(F.col("cy"), F.lit(0)).alias("y"),
-        )
-    )
-    b0 = filled.select(F.col("d").alias("d_b"))
-    idx = (
-        filled.join(F.broadcast(b0), F.col("d_b") <= F.col("d"))
-        .groupBy("d", "x", "y")
-        .agg(F.count(F.lit(1)).alias("k"))
-    )
-    ia = idx.select(F.col("k").alias("k_a"), F.col("y").alias("ya"))
-    ib = idx.select(
-        F.col("k").alias("k_b"), F.col("y").alias("x1"), F.col("x").alias("x2")
-    )
-    rows = ia.join(ib, F.col("k_b") == F.col("k_a") - 1).select(
-        F.col("ya").alias("y"), "x1", "x2"
-    )
-    m = rows.agg(
-        dec38(F.count(F.lit(1))).alias("n"),
-        dec38(F.sum("x1")).alias("s1"),
-        dec38(F.sum("x2")).alias("s2"),
-        F.sum(dec38(F.col("x1")) * dec38(F.col("x1"))).alias("s11"),
-        F.sum(dec38(F.col("x1")) * dec38(F.col("x2"))).alias("s12"),
-        F.sum(dec38(F.col("x2")) * dec38(F.col("x2"))).alias("s22"),
-        dec38(F.sum("y")).alias("sy"),
-        F.sum(dec38(F.col("x1")) * dec38(F.col("y"))).alias("sy1"),
-        F.sum(dec38(F.col("x2")) * dec38(F.col("y"))).alias("sy2"),
-        F.sum(dec38(F.col("y")) * dec38(F.col("y"))).alias("syy"),
-    )
-    n, s1, s2 = F.col("n"), F.col("s1"), F.col("s2")
-    s11, s12, s22 = F.col("s11"), F.col("s12"), F.col("s22")
-    sy, sy1, sy2, syy = F.col("sy"), F.col("sy1"), F.col("sy2"), F.col("syy")
-    fits = m.select(
-        n.alias("n"),
-        syy.alias("syy"),
-        sy.alias("sy"),
-        (n * s11 - s1 * s1).alias("dr"),
-        (n * sy1 - s1 * sy).alias("br_num"),
-        (
-            n * (s11 * s22 - s12 * s12)
-            - s1 * (s1 * s22 - s12 * s2)
-            + s2 * (s1 * s12 - s11 * s2)
-        ).alias("dd"),
-        (
-            sy * (s11 * s22 - s12 * s12)
-            - s1 * (sy1 * s22 - s12 * sy2)
-            + s2 * (sy1 * s12 - s11 * sy2)
-        ).alias("da"),
-        (
-            n * (sy1 * s22 - sy2 * s12)
-            - sy * (s1 * s22 - s12 * s2)
-            + s2 * (s1 * sy2 - sy1 * s2)
-        ).alias("db"),
-        (
-            n * (s11 * sy2 - s12 * sy1)
-            - s1 * (s1 * sy2 - sy1 * s2)
-            + sy * (s1 * s12 - s11 * s2)
-        ).alias("dc"),
-        sy1.alias("sy1v"),
-        sy2.alias("sy2v"),
-    )
-    tss_n = fits["n"] * F.col("syy") - F.col("sy") * F.col("sy")
-    bty_dd = (
-        F.col("da") * F.col("sy")
-        + F.col("db") * F.col("sy1v")
-        + F.col("dc") * F.col("sy2v")
-    )
-    out = fits.select(
-        F.col("n").cast("long").alias("n_pairs"),
-        tss_n.alias("tss_n"),
-        F.col("dr"),
-        F.col("dd"),
-        (F.col("br_num") * F.col("br_num")).alias("expl_r_scaled"),
-        (fits["n"] * bty_dd - F.col("sy") * F.col("sy") * F.col("dd")).alias(
-            "expl_u_scaled"
-        ),
-    )
-    return out.filter(
-        (F.col("tss_n") > 0) & (F.col("dr") > 0) & (F.col("dd") > 0)
-    ).select(
-        "n_pairs",
-        round_big_int_ratio(
-            F.col("expl_r_scaled"), F.col("tss_n") * F.col("dr")
-        ).alias("r2_restricted"),
-        round_big_int_ratio(
-            F.col("expl_u_scaled"), F.col("tss_n") * F.col("dd")
-        ).alias("r2_unrestricted"),
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -1143,182 +790,6 @@ def ml_brier_skill_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 ABSORB_STATE = "purchase"
-TRANSIENT_STATES = ("click", "error", "signup", "view")
-
-
-def _perm_terms():
-    """(sign, permutation) pairs for the 4x4 determinant expansion —
-    the SAME 24 terms drive the Spark expression and the SQL twin."""
-    from itertools import permutations as _perms
-
-    out = []
-    for p in _perms(range(4)):
-        s, q = 1, list(p)
-        for i in range(4):
-            for j in range(i + 1, 4):
-                if q[i] > q[j]:
-                    s = -s
-        out.append((s, p))
-    return out
-
-
-def _absorb_oracle() -> str:
-    from ..functions.exact import sql_round_big_int_ratio
-
-    ts = TRANSIENT_STATES
-
-    def a(r, c):
-        # A_rc = cf_r * [r == c] - c_rc  (transient-to-transient)
-        base = f"c{r}{c}"
-        return f"(cf{r} - {base})" if r == c else f"(- {base} + 0)"
-
-    def a_rhs(col):
-        def e(r, c):
-            return f"cf{r}" if c == col else a(r, c)
-
-        return e
-
-    def det(entry):
-        terms = []
-        for s, p in _perm_terms():
-            prod = " * ".join(entry(r, p[r]) for r in range(4))
-            terms.append(("+ " if s > 0 else "- ") + prod)
-        return "(" + " ".join(terms) + ")"
-
-    cell_defs = []
-    for r, fr in enumerate(ts):
-        cell_defs.append(
-            f"CAST(sum(CASE WHEN from_type = '{fr}' THEN c ELSE 0 END) AS HUGEINT) AS cf{r}"
-        )
-        for c, to in enumerate(ts):
-            cell_defs.append(
-                f"CAST(sum(CASE WHEN from_type = '{fr}' AND to_type = '{to}' "
-                f"THEN c ELSE 0 END) AS HUGEINT) AS c{r}{c}"
-            )
-    selects = []
-    for j, st in enumerate(ts):
-        selects.append(
-            f"""SELECT '{st}' AS state, CAST(cf{j} AS BIGINT) AS n_out,
-               CASE WHEN {det(a)} <> 0 THEN
-                 {sql_round_big_int_ratio(det(a_rhs(j)), det(a))}
-               END AS expected_steps
-        FROM m WHERE {det(a)} <> 0"""
-        )
-    return f"""
-    WITH seq AS (
-      SELECT user_id, event_type,
-             lag(event_type) OVER (PARTITION BY user_id
-                                   ORDER BY ts, event_id) AS prev_type
-      FROM events
-    ), trans AS (
-      SELECT prev_type AS from_type, event_type AS to_type,
-             CAST(count(*) AS BIGINT) AS c
-      FROM seq WHERE prev_type IS NOT NULL
-      GROUP BY 1, 2
-    ), m AS (
-      SELECT {", ".join(cell_defs)}
-      FROM trans
-    )
-    {" UNION ALL ".join(selects)}
-    """
-
-
-@register("events_absorbing_markov_steps", _absorb_oracle())
-def events_absorbing_markov_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Expected steps to absorption in the user-path Markov chain with
-    PURCHASE as the absorbing state: t = (I − Q)⁻¹·1 over the four
-    transient event types — "how many more actions until this user
-    converts, given where they are now", the absorbing-chain member
-    completing the Markov family (stationary mix, entropy rate, and
-    now the fundamental-matrix statistic that funnels approximate).
-
-    Exact path: clearing each row's denominator turns (I − Q)t = 1
-    into the INTEGER system A t = cf with A = diag(cf) − C (raw
-    transition counts), solved per component by Cramer — two 4×4
-    determinants per state, each expanded into the same 24
-    permutation terms in the Spark plan and the SQL twin (generated
-    from one shared _perm_terms table, so a sign error cannot hit
-    only one engine — the round-10 Cramer lesson institutionalized).
-    det ≤ 24·cf⁴ ≈ 10²⁸ at sf1×10 — inside decimal(38)/HUGEINT; a
-    singular system (a closed transient class) empties the output
-    identically on both engines.
-
-    One user-keyed lag exchange; everything after lives on a 1-row
-    25-cell aggregate.
-    """
-    from ..functions.exact import round_big_int_ratio
-
-    ts = TRANSIENT_STATES
-    t = Tables(spark, sf_dir)
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    seq = t.events.select(
-        "user_id", "event_type", F.lag("event_type").over(w).alias("prev_type")
-    )
-    trans = (
-        seq.where(F.col("prev_type").isNotNull())
-        .groupBy(
-            F.col("prev_type").alias("from_type"),
-            F.col("event_type").alias("to_type"),
-        )
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    aggs = []
-    for r, fr in enumerate(ts):
-        aggs.append(
-            dec38(
-                F.sum(F.when(F.col("from_type") == fr, F.col("c")).otherwise(0))
-            ).alias(f"cf{r}")
-        )
-        for c, to in enumerate(ts):
-            aggs.append(
-                dec38(
-                    F.sum(
-                        F.when(
-                            (F.col("from_type") == fr) & (F.col("to_type") == to),
-                            F.col("c"),
-                        ).otherwise(0)
-                    )
-                ).alias(f"c{r}{c}")
-            )
-    m = trans.agg(*aggs)
-
-    def a(r, c):
-        if r == c:
-            return F.col(f"cf{r}") - F.col(f"c{r}{c}")
-        return -F.col(f"c{r}{c}")
-
-    def det(entry):
-        total = None
-        for s, p in _perm_terms():
-            prod = entry(0, p[0])
-            for r in range(1, 4):
-                prod = prod * entry(r, p[r])
-            term = prod if s > 0 else -prod
-            total = term if total is None else total + term
-        return total
-
-    rows = []
-    for j, st in enumerate(ts):
-
-        def entry_j(r, c, _j=j):
-            return F.col(f"cf{r}") if c == _j else a(r, c)
-
-        dd = det(a)
-        dj = det(entry_j)
-        rows.append(
-            m.select(
-                F.lit(st).alias("state"),
-                F.col(f"cf{j}").cast("long").alias("n_out"),
-                F.when(dd != 0, round_big_int_ratio(dj, dd)).alias(
-                    "expected_steps"
-                ),
-                dd.alias("_dd"),
-            ).filter(F.col("_dd") != 0).drop("_dd")
-        )
-    out = rows[0]
-    for r in rows[1:]:
-        out = out.unionByName(r)
-    return out
 
 
 # ---------------------------------------------------------------------------

@@ -17,6 +17,9 @@ reservoir-sample audit beside the stratified/weighted samplers.
 ``events_haar_wavelet_energy`` and ``events_pacf_durbin_levinson``
 live in ``operators/daily_spectral.py`` with the other daily-series
 queries.
+
+``events_hill_tail_interevent`` lives in
+``operators/events_sequence.py`` with the other events queries.
 """
 
 from __future__ import annotations
@@ -27,109 +30,6 @@ from pyspark.sql import functions as F
 from ..functions.exact import dec38, halfup_div, sql_halfup_div
 from ..registry import register
 from ..tables import Tables
-
-
-# ---------------------------------------------------------------------------
-# 5. Hill tail-index estimator on inter-event gaps
-# ---------------------------------------------------------------------------
-
-HILL_K = 100  # tail order statistics used (k+1 fetched)
-
-
-def _hill_oracle() -> str:
-    from ..functions.detmath import sql_det_ln_steps
-
-    hd = sql_halfup_div
-    return f"""
-    WITH gaps AS (
-      SELECT epoch_us(ts) - lag(epoch_us(ts)) OVER w AS g
-      FROM events
-      WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-    ), pos AS (
-      SELECT g FROM gaps WHERE g IS NOT NULL AND g > 0
-    ), nn AS (SELECT CAST(count(*) AS BIGINT) AS n_gaps FROM pos),
-    top AS (
-      SELECT g FROM pos ORDER BY g DESC LIMIT {HILL_K + 1}
-    ), {sql_det_ln_steps('top', 'g', 'lg')},
-    thr AS (
-      SELECT CAST(min(g) AS BIGINT) AS g_k1, CAST(min(lg) AS BIGINT) AS l_k1,
-             CAST(count(*) AS BIGINT) AS n_top
-      FROM lg_rel
-    ), s AS (
-      SELECT CAST(sum(l.lg - t.l_k1) AS HUGEINT) AS sum_micro,
-             CAST(max(t.n_top) AS BIGINT) AS n_top,
-             CAST(max(t.g_k1) AS BIGINT) AS g_k1
-      FROM lg_rel l, thr t
-    )
-    SELECT nn.n_gaps, s.n_top - 1 AS k, s.g_k1 AS threshold_us,
-           CASE WHEN s.sum_micro > 0 THEN
-             CAST({hd('1000000000000::HUGEINT * (s.n_top - 1)', 's.sum_micro')}
-                  AS DOUBLE) / 1000000
-           END AS hill_alpha
-    FROM s, nn
-    """
-
-
-@register("events_hill_tail_interevent", oracle=_hill_oracle())
-def events_hill_tail_interevent(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hill tail-index estimate of the inter-event-time distribution:
-    alpha = k / sum_{i<=k} (ln x_(i) - ln x_(k+1)) over the k largest
-    per-user gaps — the standard heavy-tail exponent estimator, the
-    parametric complement to ``events_interarrival_burstiness`` (CV
-    says the process is bursty; Hill says HOW heavy the silence tail
-    is, which drives session-timeout and state-TTL sizing).
-
-    Determinism path: gaps in exact epoch-microseconds from a
-    user-partitioned lag (never a global window); the top k+1 gaps are
-    selected by VALUE (ties at the cut contribute identical values, so
-    the multiset — and every downstream number — is order-free); lns
-    come from the shared deterministic fixed-point ln
-    (``functions.detmath``, micro-quantized int64s in BOTH engines), so
-    the sum is exact-integer and the final ratio one half-up division.
-    Rows whose gap ties the threshold contribute exactly 0, so boundary
-    tie-resolution cannot move the estimate.
-
-    Scale shape: the per-user lag partitions by user_id (hash-parallel
-    at any scale); the tail fetch is a TakeOrderedAndProject of k+1
-    rows; everything after runs on <= 101 rows.
-    """
-    from ..functions.detmath import det_ln_q
-    from pyspark.sql.window import Window
-
-    t = Tables(spark, sf_dir)
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gaps = t.events.select(
-        (
-            F.unix_micros(F.col("ts"))
-            - F.unix_micros(F.lag(F.col("ts")).over(w))
-        ).alias("g")
-    ).filter(F.col("g").isNotNull() & (F.col("g") > 0))
-    nn = gaps.agg(F.count(F.lit(1)).cast("long").alias("n_gaps"))
-    top = gaps.orderBy(F.col("g").desc()).limit(HILL_K + 1)
-    lg = top.select("g", det_ln_q(F.col("g")).alias("lg"))
-    thr = lg.agg(
-        F.min("g").cast("long").alias("g_k1"),
-        F.min("lg").cast("long").alias("l_k1"),
-        F.count(F.lit(1)).cast("long").alias("n_top"),
-    )
-    s = lg.crossJoin(F.broadcast(thr)).agg(
-        F.sum(dec38(F.col("lg") - F.col("l_k1"))).alias("sum_micro"),
-        F.max("n_top").alias("n_top"),
-        F.max("g_k1").alias("g_k1"),
-    )
-    return s.crossJoin(F.broadcast(nn)).select(
-        "n_gaps",
-        (F.col("n_top") - 1).cast("long").alias("k"),
-        F.col("g_k1").alias("threshold_us"),
-        F.when(
-            F.col("sum_micro") > 0,
-            halfup_div(
-                F.lit(10**12).cast("decimal(38,0)") * (F.col("n_top") - 1),
-                F.col("sum_micro"),
-            ).cast("double")
-            / F.lit(1e6),
-        ).alias("hill_alpha"),
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -7,6 +7,11 @@ SinglePartition and no-cartesian plan sweeps.
 ``stats_logistic_gd`` and ``stats_welch_anova`` live in
 ``operators/stats_models.py``; ``stats_pareto_by_nation`` lives in
 ``operators/stats_dist.py`` with the other stats queries.
+
+``events_funnel_time_windowed``, ``events_late_arrival_audit`` and
+``events_scd_asof_snapshot`` live in ``operators/events_sequence.py``;
+``events_hourly_topk_users`` lives in ``operators/events_series.py``
+with the other events queries.
 """
 
 from __future__ import annotations
@@ -653,58 +658,6 @@ def embedding_pq_assign_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# 8. SCD-style as-of snapshot (latest state per key at a point in time)
-# ---------------------------------------------------------------------------
-
-ASOF_CUTOFF = "2024-01-15 00:00:00"
-
-
-@register(
-    "events_scd_asof_snapshot",
-    oracle=f"""
-    SELECT user_id, event_id AS last_event_id, event_type AS last_event_type,
-           ts AS last_ts, n_before
-    FROM (
-      SELECT user_id, event_id, event_type, ts,
-             row_number() OVER (PARTITION BY user_id
-                                ORDER BY ts DESC, event_id DESC) AS rn,
-             CAST(count(*) OVER (PARTITION BY user_id) AS BIGINT) AS n_before
-      FROM events WHERE ts <= TIMESTAMP '{ASOF_CUTOFF}'
-    ) WHERE rn = 1
-    """,
-)
-def events_scd_asof_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Point-in-time state reconstruction: each user's LATEST event at a
-    literal cutoff — the slowly-changing-dimension / CDC-compaction
-    primitive ("what did the table look like on the 15th?") that every
-    warehouse upsert pipeline replays.
-
-    Scale: the cutoff filter pushes to the scan; one user_id shuffle;
-    the rank filter is a WindowGroupLimit (per-partition top-1 runs
-    BELOW the exchange, so the shuffle carries at most one candidate
-    row per (task, user), not the user's history). Deterministic
-    tie-break (ts, event_id) makes the snapshot reproducible — the
-    property that lets two clusters agree on a rebuilt state table.
-    """
-    t = Tables(spark, sf_dir)
-    ev = t.events.where(F.col("ts") <= F.lit(ASOF_CUTOFF).cast("timestamp"))
-    w = Window.partitionBy("user_id").orderBy(F.col("ts").desc(), F.col("event_id").desc())
-    wc = Window.partitionBy("user_id")
-    return (
-        ev.withColumn("rn", F.row_number().over(w))
-        .withColumn("n_before", F.count(F.lit(1)).over(wc).cast("long"))
-        .filter(F.col("rn") == 1)
-        .select(
-            "user_id",
-            F.col("event_id").alias("last_event_id"),
-            F.col("event_type").alias("last_event_type"),
-            F.col("ts").alias("last_ts"),
-            "n_before",
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
 # 9. Key-uniqueness violation audit
 # ---------------------------------------------------------------------------
 
@@ -863,84 +816,6 @@ def join_range_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("cents").cast("long").alias("sum_cents"),
         F.min("cents").alias("min_cents"),
         F.max("cents").alias("max_cents"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# 12. Time-constrained funnel (conversion within a window)
-# ---------------------------------------------------------------------------
-
-FUNNEL_WINDOW_MIN = 60  # purchase must follow the first click within 1h
-
-
-def _funnel_tw_oracle() -> str:
-    from ..functions.exact import sql_round_int_ratio
-
-    rate = sql_round_int_ratio("(SELECT count(*) FROM conv)", "count(*)")
-    return f"""
-    WITH clicks AS (
-      SELECT user_id, min(ts) AS first_click FROM events
-      WHERE event_type = 'click' GROUP BY user_id
-    ), conv AS (
-      SELECT c.user_id, min(e.ts) AS first_purchase
-      FROM clicks c JOIN events e
-        ON e.user_id = c.user_id AND e.event_type = 'purchase'
-       AND e.ts > c.first_click
-       AND e.ts <= c.first_click + INTERVAL {FUNNEL_WINDOW_MIN} MINUTE
-      GROUP BY 1
-    )
-    SELECT CAST(count(*) AS BIGINT) AS n_clickers,
-           CAST((SELECT count(*) FROM conv) AS BIGINT) AS n_converted,
-           {rate} AS conversion_rate
-    FROM clicks
-    """
-
-
-@register("events_funnel_time_windowed", oracle=_funnel_tw_oracle())
-def events_funnel_time_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Time-constrained funnel: of the users who clicked, how many
-    purchased WITHIN 60 minutes of their first click — the
-    attribution-window variant of ``events_funnel_view_click_purchase``
-    (unbounded ordering there, bounded latency here; marketing/abuse
-    funnels are almost always window-bounded in production).
-
-    Scale: first-click table is one user_id aggregate; the conversion
-    probe joins purchases on user_id with the window as a residual
-    range predicate on the co-partitioned join — no theta join, no
-    per-user event history materialized. Conversion rate is an exact
-    half-up integer ratio (``round_int_ratio``).
-    """
-    from ..functions.exact import round_int_ratio
-
-    t = Tables(spark, sf_dir)
-    clicks = (
-        t.events.where(F.col("event_type") == "click")
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("first_click"))
-    )
-    purchases = t.events.where(F.col("event_type") == "purchase").select(
-        "user_id", F.col("ts").alias("p_ts")
-    )
-    conv = (
-        clicks.join(purchases, "user_id")
-        .where(
-            (F.col("p_ts") > F.col("first_click"))
-            & (
-                F.col("p_ts")
-                <= F.col("first_click") + F.expr(f"INTERVAL {FUNNEL_WINDOW_MIN} MINUTE")
-            )
-        )
-        .groupBy("user_id")
-        .agg(F.min("p_ts").alias("first_purchase"))
-    )
-    n_clickers = clicks.agg(F.count(F.lit(1)).alias("n_clickers"))
-    n_conv = conv.agg(F.count(F.lit(1)).alias("n_converted"))
-    return n_clickers.crossJoin(F.broadcast(n_conv)).select(
-        "n_clickers",
-        "n_converted",
-        round_int_ratio(F.col("n_converted"), F.col("n_clickers")).alias(
-            "conversion_rate"
-        ),
     )
 
 
@@ -1235,125 +1110,6 @@ def ml_confusion_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         round_int_ratio(F.col("tp"), F.greatest(F.col("tp") + F.col("fn"), F.lit(1))).alias(
             "recall_"
         ),
-    )
-
-
-# ---------------------------------------------------------------------------
-# 19. Hourly top-k active users (windowed group top-k)
-# ---------------------------------------------------------------------------
-
-HOURLY_TOPK = 3
-
-
-@register(
-    "events_hourly_topk_users",
-    oracle=f"""
-    WITH hourly AS (
-      SELECT date_trunc('hour', ts) AS hour, user_id,
-             CAST(count(*) AS BIGINT) AS n_events
-      FROM events GROUP BY 1, 2
-    )
-    SELECT hour, user_id, n_events, rnk FROM (
-      SELECT hour, user_id, n_events,
-             CAST(row_number() OVER (PARTITION BY hour
-                                     ORDER BY n_events DESC, user_id) AS BIGINT) AS rnk
-      FROM hourly
-    ) WHERE rnk <= {HOURLY_TOPK}
-    """,
-)
-def events_hourly_topk_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-3 most active users per hour — the periodic-leaderboard
-    shape (windowed group top-k) every ops dashboard renders.
-
-    Scale: the (hour, user) pre-aggregate partial-aggregates map-side
-    before its shuffle; the per-hour rank is a PARTITIONED window whose
-    WindowGroupLimit keeps only k candidates per partition below the
-    exchange — so the second shuffle carries <= k rows per (task,
-    hour). Deterministic user_id tie-break. The same plan maintained
-    incrementally is the mergeable-top-k MV (``agg_topk_mergeable``
-    demonstrates the merge algebra).
-    """
-    t = Tables(spark, sf_dir)
-    hourly = (
-        t.events.select(F.date_trunc("hour", F.col("ts")).alias("hour"), "user_id")
-        .groupBy("hour", "user_id")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-    )
-    w = Window.partitionBy("hour").orderBy(F.col("n_events").desc(), F.col("user_id"))
-    return (
-        hourly.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= HOURLY_TOPK)
-        .select("hour", "user_id", "n_events", "rnk")
-    )
-
-
-# ---------------------------------------------------------------------------
-# 20. Late-arrival audit (watermark-tuning diagnostic)
-# ---------------------------------------------------------------------------
-
-LATE_BUCKETS_S = [0, 60, 300, 900, 3600]  # lateness histogram edges (seconds)
-
-
-@register(
-    "events_late_arrival_audit",
-    oracle=f"""
-    WITH ordered AS (
-      SELECT user_id, ts,
-             max(ts) OVER (PARTITION BY user_id ORDER BY event_id
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-               AS high_water
-      FROM events
-    ), late AS (
-      SELECT CAST(date_diff('second', ts, high_water) AS BIGINT) AS late_s
-      FROM ordered WHERE high_water IS NOT NULL AND ts < high_water
-    ), bucketed AS (
-      SELECT CAST(CASE
-               {" ".join(f"WHEN late_s < {hi} THEN {lo}" for lo, hi in zip(LATE_BUCKETS_S, LATE_BUCKETS_S[1:]))}
-               ELSE {LATE_BUCKETS_S[-1]} END AS BIGINT) AS bucket_lo_s
-      FROM late
-    )
-    SELECT bucket_lo_s, CAST(count(*) AS BIGINT) AS n_late_events
-    FROM bucketed GROUP BY bucket_lo_s
-    """,
-)
-def events_late_arrival_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Out-of-order-arrival audit: treating event_id as arrival order,
-    how late (vs the per-user event-time high-water mark) do events
-    arrive, bucketed into a lateness histogram — the diagnostic that
-    picks a Structured Streaming WATERMARK: each bucket's count is
-    exactly the data a `withWatermark` of that delay would drop or
-    keep, measured on the real stream's history instead of guessed.
-
-    Scale: one per-user ordered window (running max over arrival
-    order — partitioned, never global), then a |buckets|-row
-    aggregate. The same audit over a 100 TB event archive is one
-    shuffle on the session key.
-    """
-    t = Tables(spark, sf_dir)
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("event_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    ordered = t.events.select(
-        "user_id", "ts", F.max("ts").over(w).alias("high_water")
-    )
-    late = ordered.where(
-        F.col("high_water").isNotNull() & (F.col("ts") < F.col("high_water"))
-    ).select(
-        (F.unix_timestamp("high_water") - F.unix_timestamp("ts"))
-        .cast("long")
-        .alias("late_s")
-    )
-    bucket = None
-    for lo, hi in zip(LATE_BUCKETS_S, LATE_BUCKETS_S[1:]):
-        cond = F.col("late_s") < hi
-        bucket = F.when(cond, lo) if bucket is None else bucket.when(cond, lo)
-    bucket = bucket.otherwise(LATE_BUCKETS_S[-1]).cast("long")
-    return (
-        late.select(bucket.alias("bucket_lo_s"))
-        .groupBy("bucket_lo_s")
-        .agg(F.count(F.lit(1)).alias("n_late_events"))
     )
 
 

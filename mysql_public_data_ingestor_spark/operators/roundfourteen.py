@@ -19,6 +19,9 @@ Reference parity note: the reference (Go ingestion pipeline,
 
 ``events_spectral_flatness_residual`` lives in
 ``operators/daily_spectral.py`` with the other daily-series queries.
+
+``events_parkinson_volatility_daily`` lives in
+``operators/events_series.py`` with the other events queries.
 """
 
 from __future__ import annotations
@@ -26,7 +29,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.detmath import LN2_MICRO
 from ..functions.exact import dec38, halfup_div, sql_halfup_div
 from ..registry import register
 from ..tables import Tables
@@ -42,7 +44,6 @@ STK_GLOBAL_K = 10
 
 
 def _shard_topk_oracle() -> str:
-    hd = sql_halfup_div
     return f"""
     WITH base AS (
       SELECT l_partkey AS item,
@@ -247,87 +248,6 @@ def dq_whipple_heaping_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .cast("long")
         .alias("digit_chisq_milli"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# 5. Parkinson high-low volatility of the hourly event intensity
-# ---------------------------------------------------------------------------
-
-
-def _parkinson_oracle() -> str:
-    from ..functions.detmath import sql_det_ln_steps
-
-    return f"""
-    WITH hourly AS (
-      SELECT CAST(ts AS DATE) AS d, date_part('hour', ts) AS h,
-             CAST(count(*) AS BIGINT) AS c
-      FROM events GROUP BY 1, 2
-    ), hl AS (
-      SELECT d, CAST(max(c) AS BIGINT) AS hi, CAST(min(c) AS BIGINT) AS lo,
-             CAST(max(c) AS DOUBLE) AS hi_dbl, CAST(min(c) AS DOUBLE) AS lo_dbl
-      FROM hourly GROUP BY d
-    ), {sql_det_ln_steps('hl', 'hi_dbl', 'lnh')},
-    {sql_det_ln_steps('lnh_rel', 'lo_dbl', 'lnl')},
-    terms AS (
-      SELECT CAST(count(*) AS HUGEINT) AS n,
-             CAST(sum((lnh - lnl) * CAST(lnh - lnl AS HUGEINT)) AS HUGEINT)
-               AS sd2
-      FROM lnl_rel
-    )
-    SELECT CAST(n AS BIGINT) AS n_days,
-           CAST({sql_halfup_div('sd2', f'4::HUGEINT * {LN2_MICRO} * n')}
-                AS BIGINT) AS parkinson_var_micro
-    FROM terms
-    """
-
-
-@register("events_parkinson_volatility_daily", _parkinson_oracle())
-def events_parkinson_volatility_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Parkinson (1980) range-based volatility of the hourly event
-    intensity: sigma^2_P = (1 / (4 ln 2)) x mean over days of
-    ln(high/low)^2, where high/low are each day's max/min hourly event
-    counts (hours with events; the trading-day high-low convention).
-    The close-to-close variance of the daily total sees only the
-    day-level aggregate; the Parkinson estimator extracts ~5x more
-    information per day from the intraday RANGE — the capacity
-    planner's question ("how violently does load swing within a day")
-    answered with one number per corpus.
-
-    Exactness: hourly extremes are exact integers; ln(high/low) =
-    det-ln(high) - det-ln(low) in micro-nats (integer); the squared
-    terms sum as integers and divide once by 4 ln 2 via the shared
-    LN2_MICRO literal (anchored in tests/test_roundthirteen7.py).
-
-    Scale shape: one fact scan partial-aggregates to (day, hour)
-    cells, then to per-day extremes (calendar-bounded); 1 row out.
-    """
-    from ..functions.detmath import det_ln_q
-
-    t = Tables(spark, sf_dir)
-    hourly = (
-        t.events.select(F.to_date("ts").alias("d"), F.hour("ts").alias("h"))
-        .groupBy("d", "h")
-        .agg(F.count(F.lit(1)).cast("long").alias("c"))
-    )
-    hl = hourly.groupBy("d").agg(
-        F.max("c").alias("hi"), F.min("c").alias("lo")
-    )
-    dterm = det_ln_q(F.col("hi").cast("double")) - det_ln_q(
-        F.col("lo").cast("double")
-    )
-    terms = hl.select(dterm.alias("dln")).agg(
-        dec38(F.count(F.lit(1))).alias("n"),
-        F.sum(dec38(F.col("dln")) * F.col("dln")).alias("sd2"),
-    )
-    return terms.select(
-        F.col("n").cast("long").alias("n_days"),
-        halfup_div(
-            F.col("sd2"),
-            F.lit(4 * LN2_MICRO).cast("decimal(38,0)") * F.col("n"),
-        )
-        .cast("long")
-        .alias("parkinson_var_micro"),
     )
 
 

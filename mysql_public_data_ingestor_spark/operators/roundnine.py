@@ -21,6 +21,9 @@ with the other daily-series queries.
 ``stats_ansari_bradley_quantity`` and ``stats_cvm_two_sample`` live in
 ``operators/stats_rank.py``; ``stats_two_way_anova_price`` lives in
 ``operators/stats_models.py`` with the other stats queries.
+
+``events_dau_mau_stickiness`` and ``events_retention_decay_fit`` live in
+``operators/events_users.py`` with the other events queries.
 """
 
 from __future__ import annotations
@@ -649,76 +652,6 @@ def ml_auc_jackknife_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# 12. DAU/MAU stickiness per month
-# ---------------------------------------------------------------------------
-
-
-def _stickiness_oracle() -> str:
-    from ..functions.exact import sql_round_int_ratio
-
-    return f"""
-    WITH daily AS (
-      SELECT strftime(CAST(ts AS DATE), '%Y-%m') AS month,
-             CAST(ts AS DATE) AS day,
-             CAST(count(DISTINCT user_id) AS BIGINT) AS dau
-      FROM events GROUP BY 1, 2
-    ), monthly AS (
-      SELECT strftime(CAST(ts AS DATE), '%Y-%m') AS month,
-             CAST(count(DISTINCT user_id) AS BIGINT) AS mau
-      FROM events GROUP BY 1
-    ), d AS (
-      SELECT month, CAST(sum(dau) AS BIGINT) AS sum_dau,
-             CAST(count(*) AS BIGINT) AS n_days
-      FROM daily GROUP BY month
-    )
-    SELECT d.month, d.n_days, d.sum_dau, m.mau,
-           {sql_round_int_ratio('d.sum_dau', 'd.n_days * m.mau')} AS stickiness
-    FROM d JOIN monthly m ON m.month = d.month
-    ORDER BY d.month
-    """
-
-
-@register("events_dau_mau_stickiness", oracle=_stickiness_oracle())
-def events_dau_mau_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DAU/MAU stickiness per calendar month: mean daily active users
-    over monthly active users — the standard product-engagement ratio
-    (1.0 = every monthly user active every day), computed as
-    sum(DAU)/(active_days * MAU) so it is ONE exact integer ratio.
-    Completes the engagement family (rolling actives, weekly
-    retention, cumulative distinct) with the canonical headline
-    metric.
-
-    Two distinct-aggregations (day grain, month grain) — both shuffle
-    on (period, user) with map-side partial dedup — joined on the
-    |months|-bounded key; the ratio is exact half-up 6dp.
-    """
-    from ..functions.exact import round_int_ratio
-
-    t = Tables(spark, sf_dir)
-    month = F.date_format(F.col("ts"), "yyyy-MM").alias("month")
-    daily = t.events.groupBy(month, F.to_date("ts").alias("day")).agg(
-        F.countDistinct("user_id").alias("dau")
-    )
-    monthly = t.events.groupBy(month).agg(F.countDistinct("user_id").alias("mau"))
-    d = daily.groupBy("month").agg(
-        F.sum("dau").alias("sum_dau"), F.count(F.lit(1)).alias("n_days")
-    )
-    return (
-        d.join(monthly, "month")
-        .select(
-            "month",
-            "n_days",
-            "sum_dau",
-            "mau",
-            round_int_ratio(F.col("sum_dau"), F.col("n_days") * F.col("mau")).alias(
-                "stickiness"
-            ),
-        )
-        .orderBy("month")
-    )
-
-
-# ---------------------------------------------------------------------------
 # 13. Sentence-length profile per language
 # ---------------------------------------------------------------------------
 
@@ -1142,169 +1075,6 @@ def ml_youden_optimal_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("fpr_u") / F.lit(1e9)).alias("fpr"),
             (F.col("j_u") / F.lit(1e9)).alias("youden_j"),
         )
-    )
-
-
-# ---------------------------------------------------------------------------
-# 19. Pooled retention-decay fit (exponential half-life)
-# ---------------------------------------------------------------------------
-
-LN2_U9 = 693_147_181  # round(ln 2 * 1e9), the half-life literal
-
-
-def _retention_decay_oracle() -> str:
-    from ..functions.detmath import sql_det_ln_steps
-    from ..functions.exact import sql_round_int_ratio
-
-    return f"""
-    WITH firsts AS (
-      SELECT user_id, date_trunc('week', min(ts)) AS cohort_week
-      FROM events GROUP BY user_id
-    ), maxw AS (
-      SELECT max(date_trunc('week', ts)) AS max_week FROM events
-    ), activity AS (
-      SELECT DISTINCT e.user_id, f.cohort_week,
-             CAST(datediff('day', f.cohort_week, date_trunc('week', e.ts)) / 7
-               AS BIGINT) AS w
-      FROM events e JOIN firsts f ON e.user_id = f.user_id
-    ), obs AS (
-      SELECT a.w,
-             CAST(count(*) AS BIGINT) AS act_w,
-             (SELECT CAST(count(*) AS BIGINT) FROM activity a0, maxw
-              WHERE a0.w = 0
-                AND datediff('day', a0.cohort_week, maxw.max_week) / 7 >= a.w)
-               AS base_w
-      FROM activity a, maxw
-      WHERE a.w >= 1 AND datediff('day', a.cohort_week, maxw.max_week) / 7 >= a.w
-      GROUP BY a.w
-    ), r AS (
-      SELECT w, act_w, base_w,
-             CAST(act_w AS DOUBLE) / CAST(base_w AS DOUBLE) AS ratio
-      FROM obs WHERE act_w > 0 AND base_w > 0
-    ), {sql_det_ln_steps('r', 'ratio', 'y_u', 9)},
-    s AS (
-      SELECT CAST(count(*) AS BIGINT) AS n,
-             CAST(sum(w) AS BIGINT) AS sw,
-             CAST(sum(w * w) AS BIGINT) AS sww,
-             CAST(sum(y_u) AS BIGINT) AS sy,
-             CAST(sum(w * y_u) AS BIGINT) AS swy
-      FROM y_u_rel
-    ), fit AS (
-      SELECT n,
-             n * swy - sw * sy AS num,
-             n * sww - sw * sw AS den,
-             sy, sw
-      FROM s WHERE n >= 2 AND n * sww - sw * sw > 0
-    )
-    SELECT n AS n_weeks,
-           CAST(CASE WHEN num < 0
-                THEN -((2 * (-num) + den) // (2 * den))
-                ELSE (2 * num + den) // (2 * den) END AS BIGINT)
-             / 1000000000.0 AS slope_ln_per_week,
-           CAST(CASE WHEN sy * den - num * sw < 0
-                THEN -((2 * (-(sy::HUGEINT * den - num::HUGEINT * sw)) + n::HUGEINT * den)
-                       // (2::HUGEINT * n * den))
-                ELSE (2 * (sy::HUGEINT * den - num::HUGEINT * sw) + n::HUGEINT * den)
-                       // (2::HUGEINT * n * den) END AS BIGINT)
-             / 1000000000.0 AS intercept_ln,
-           CASE WHEN num < 0 THEN
-             {sql_round_int_ratio(f'{LN2_U9}::BIGINT * den', '(-num)')}
-           END AS half_life_weeks
-    FROM fit
-    """
-
-
-@register("events_retention_decay_fit", oracle=_retention_decay_oracle())
-def events_retention_decay_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exponential decay fit of the pooled weekly retention curve:
-    ln(r_w) regressed on week offset w (observable-triangle-corrected
-    — a cohort only contributes to offsets its age covers), reporting
-    slope, intercept and the implied half-life ln2/(-slope) — turning
-    the retention TABLE (``events_weekly_retention``) into the 2-
-    parameter summary growth teams actually quote.
-
-    r_w = active(w)/eligible-cohort-size is one correctly-rounded
-    double divide of exact counts, ln is det-ln quantized 1e-9, and
-    the OLS closed form runs in exact integer arithmetic over the
-    calendar-bounded week domain; slope/intercept/half-life are exact
-    half-up ratios (half-life only when the slope is negative).
-    """
-    from ..functions.detmath import det_ln_q
-    from ..functions.exact import round_int_ratio
-
-    t = Tables(spark, sf_dir)
-    firsts = t.events.groupBy("user_id").agg(
-        F.date_trunc("week", F.min("ts")).alias("cohort_week")
-    )
-    maxw = t.events.agg(F.date_trunc("week", F.max("ts")).alias("max_week"))
-    activity = (
-        t.events.join(firsts, "user_id")
-        .select(
-            "user_id",
-            "cohort_week",
-            (
-                F.datediff(F.date_trunc("week", F.col("ts")), F.col("cohort_week"))
-                / 7
-            )
-            .cast("long")
-            .alias("w"),
-        )
-        .distinct()
-    )
-    act = activity.crossJoin(F.broadcast(maxw)).withColumn(
-        "age_w",
-        (F.datediff(F.col("max_week"), F.col("cohort_week")) / 7).cast("long"),
-    )
-    obs = (
-        act.filter((F.col("w") >= 1) & (F.col("age_w") >= F.col("w")))
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("act_w"))
-    )
-    base = act.filter(F.col("w") == 0).select("cohort_week", "age_w")
-    # eligible cohort size per offset: cohorts old enough to observe w
-    base_per_w = obs.select("w", "act_w").join(
-        base.select(F.col("age_w").alias("base_age")), F.col("base_age") >= F.col("w")
-    ).groupBy("w", "act_w").agg(F.count(F.lit(1)).alias("base_w"))
-    r = base_per_w.filter((F.col("act_w") > 0) & (F.col("base_w") > 0)).select(
-        "w",
-        (F.col("act_w").cast("double") / F.col("base_w").cast("double")).alias("ratio"),
-    )
-    y = r.select("w", det_ln_q(F.col("ratio"), 9).alias("y_u"))
-    s = y.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("w").alias("sw"),
-        F.sum(F.col("w") * F.col("w")).alias("sww"),
-        F.sum("y_u").alias("sy"),
-        F.sum(F.col("w") * F.col("y_u")).alias("swy"),
-    )
-    num = F.col("n") * F.col("swy") - F.col("sw") * F.col("sy")
-    den = F.col("n") * F.col("sww") - F.col("sw") * F.col("sw")
-    fit = s.filter((F.col("n") >= 2) & (den > 0)).select(
-        F.col("n").alias("n_weeks"), num.alias("num"), den.alias("den"), "sy", "sw"
-    )
-
-    def hup_signed(numc, denc):
-        mag = ((2 * F.abs(numc) + denc) - (2 * F.abs(numc) + denc) % (2 * denc)) / (
-            2 * denc
-        )
-        return F.when(numc < 0, -mag.cast("long")).otherwise(mag.cast("long"))
-
-    i_num = dec38(F.col("sy")) * F.col("den") - dec38(F.col("num")) * F.col("sw")
-    i_den = dec38(F.col("n_weeks")) * F.col("den")
-    i_a = F.lit(2).cast("decimal(38,0)") * F.abs(i_num) + i_den
-    i_mag = ((i_a - i_a % (F.lit(2).cast("decimal(38,0)") * i_den)) / (
-        F.lit(2).cast("decimal(38,0)") * i_den
-    )).cast("long")
-    return fit.select(
-        "n_weeks",
-        (hup_signed(F.col("num"), F.col("den")) / F.lit(1e9)).alias(
-            "slope_ln_per_week"
-        ),
-        (F.when(i_num < 0, -i_mag).otherwise(i_mag) / F.lit(1e9)).alias("intercept_ln"),
-        F.when(
-            F.col("num") < 0,
-            round_int_ratio(F.lit(LN2_U9) * F.col("den"), -F.col("num")),
-        ).alias("half_life_weeks"),
     )
 
 

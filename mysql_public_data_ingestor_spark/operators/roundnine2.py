@@ -26,6 +26,9 @@ neighborhoods) — never raw fact rows.
 ``operators/stats_models.py``; ``stats_cronbach_alpha_gates`` lives in
 ``operators/stats_tables.py``; ``stats_gumbel_daily_max_fit`` lives in
 ``operators/stats_dist.py`` with the other stats queries.
+
+``events_sequential_patterns_topk`` lives in
+``operators/events_sequence.py`` with the other events queries.
 """
 
 from __future__ import annotations
@@ -177,107 +180,6 @@ def sketch_rank_sample_quantile_merge(spark: SparkSession, sf_dir: str) -> DataF
             F.lit(100).cast("decimal(38,0)") * F.col("n"),
         ).alias("rank_err"),
     )
-
-
-# ---------------------------------------------------------------------------
-# 3. Sequential patterns: top session event-type trigrams
-# ---------------------------------------------------------------------------
-
-SEQPAT_TOPK = 20
-
-
-def _seqpat_oracle() -> str:
-    from ..streaming.batch_equivalents import SESSION_GAP_MIN
-
-    return f"""
-    WITH flagged AS (
-      SELECT user_id, ts, event_id, event_type,
-             CASE WHEN lag(ts) OVER w IS NULL
-                    OR epoch_us(ts) - epoch_us(lag(ts) OVER w)
-                       > {SESSION_GAP_MIN} * 60000000
-                  THEN 1 ELSE 0 END AS is_new
-      FROM events
-      WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-    ), sessions AS (
-      SELECT user_id, ts, event_id, event_type,
-             sum(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_id
-      FROM flagged
-    ), grams AS (
-      SELECT event_type AS e1,
-             lead(event_type, 1) OVER w2 AS e2,
-             lead(event_type, 2) OVER w2 AS e3,
-             session_id,
-             lead(session_id, 2) OVER w2 AS sid3
-      FROM sessions
-      WINDOW w2 AS (PARTITION BY user_id ORDER BY ts, event_id)
-    ), pat AS (
-      SELECT e1 || '>' || e2 || '>' || e3 AS pattern,
-             CAST(count(*) AS BIGINT) AS n
-      FROM grams
-      WHERE sid3 = session_id
-        AND e1 IS NOT NULL AND e2 IS NOT NULL AND e3 IS NOT NULL
-      GROUP BY 1
-    )
-    SELECT pattern, n FROM pat
-    ORDER BY n DESC, pattern LIMIT {SEQPAT_TOPK}
-    """
-
-
-@register("events_sequential_patterns_topk", oracle=_seqpat_oracle())
-def events_sequential_patterns_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sequential-pattern mining, bounded to length-3: the most
-    frequent consecutive event-type trigrams WITHIN a session (same
-    30-min-gap sessionization as ``events_sessionization``) — the
-    contiguous-sequence member of the product-analytics family
-    (funnels check ONE fixed path; this surfaces the top observed
-    paths), VERDICT r8 item 6's "sequential-pattern mining off the
-    sessionization shuffle".
-
-    One user-keyed shuffle serves both the session ids and the
-    two-step lead() gram assembly (same window); a trigram survives
-    only if its third event is still in the SAME session (lead of the
-    cumulative session id equals the current one — cheaper than two
-    boundary checks and exactly equivalent). The global top-k is a
-    TakeOrderedAndProject over the (pattern → count) aggregate, whose
-    domain is |event_types|^3, not rows. Tie-break on the pattern
-    string keeps the cross-engine hash stable.
-    """
-    from ..streaming.batch_equivalents import SESSION_GAP_MIN
-
-    t = Tables(spark, sf_dir)
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gap = F.unix_micros(F.col("ts")) - F.unix_micros(F.lag(F.col("ts")).over(w))
-    flagged = t.events.select("user_id", "ts", "event_id", "event_type").withColumn(
-        "is_new",
-        F.when(gap.isNull() | (gap > SESSION_GAP_MIN * 60_000_000), 1).otherwise(0),
-    )
-    cum = w.rowsBetween(Window.unboundedPreceding, 0)
-    sessions = flagged.withColumn("session_id", F.sum("is_new").over(cum))
-    grams = sessions.select(
-        F.col("event_type").alias("e1"),
-        F.lead("event_type", 1).over(w).alias("e2"),
-        F.lead("event_type", 2).over(w).alias("e3"),
-        "session_id",
-        F.lead("session_id", 2).over(w).alias("sid3"),
-    )
-    # NULL parity (ADVICE r9): concat_ws SKIPS null components while the
-    # oracle's || propagates them — a NULL event_type would make Spark
-    # count a malformed 2-part pattern the oracle drops. Both engines
-    # now filter null components explicitly, so the semantics agree for
-    # any input, not just the null-free fixtures.
-    pat = (
-        grams.filter(
-            (F.col("sid3") == F.col("session_id"))
-            & F.col("e1").isNotNull()
-            & F.col("e2").isNotNull()
-            & F.col("e3").isNotNull()
-        )
-        .select(F.concat_ws(">", "e1", "e2", "e3").alias("pattern"))
-        .groupBy("pattern")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    return pat.orderBy(F.col("n").desc(), "pattern").limit(SEQPAT_TOPK)
 
 
 # ---------------------------------------------------------------------------

@@ -14,6 +14,10 @@ Every operator is registered directly (@register).
 ``operators/stats_rank.py``; ``stats_wilson_ci_by_nation`` lives in
 ``operators/stats_tables.py``; ``stats_changepoint_binseg`` lives in
 ``operators/stats_models.py`` with the other stats queries.
+
+``events_acf_daily_lags``, ``events_holt_linear_fit`` and
+``events_poisson_rate_test`` live in ``operators/events_series.py`` with
+the other events queries.
 """
 
 from __future__ import annotations
@@ -136,112 +140,6 @@ def privacy_t_closeness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.floor(tv_ppm + F.lit(0.5)).cast("long") <= F.lit(TCLOSE_T_PPM)).alias(
             "meets_t"
         ),
-    )
-
-
-# ---------------------------------------------------------------------------
-# 4. Autocorrelation of the daily activity series (lags 1..7)
-# ---------------------------------------------------------------------------
-
-ACF_MAX_LAG = 7
-
-
-def _acf_oracle() -> str:
-    return f"""
-    WITH daily AS (
-      SELECT event_type, CAST(ts AS DATE) AS d, CAST(count(*) AS BIGINT) AS y
-      FROM events GROUP BY 1, 2
-    ), idx AS (
-      SELECT event_type, y,
-             row_number() OVER (PARTITION BY event_type ORDER BY d) AS i,
-             CAST(count(*) OVER (PARTITION BY event_type) AS BIGINT) AS n,
-             CAST(sum(y) OVER (PARTITION BY event_type) AS BIGINT) AS s
-      FROM daily
-    ), cent AS (
-      SELECT event_type, i, n,
-             n::HUGEINT * y - s::HUGEINT AS z
-      FROM idx
-    ), lags AS (
-      SELECT l FROM unnest(range(1, {ACF_MAX_LAG + 1})) AS t(l)
-    ), num AS (
-      SELECT a.event_type, l.l AS lag, a.n,
-             sum(a.z * b.z) AS num
-      FROM cent a
-      JOIN lags l ON true
-      JOIN cent b ON b.event_type = a.event_type AND b.i = a.i + l.l
-      GROUP BY 1, 2, 3
-    ), den AS (
-      SELECT event_type, sum(z * z) AS den FROM cent GROUP BY event_type
-    )
-    SELECT n.event_type, n.lag, n.n AS n_days,
-           CAST(CASE WHEN n.num >= 0
-             THEN  ((2000000::HUGEINT * n.num + d.den) // (2::HUGEINT * d.den))
-             ELSE -((2000000::HUGEINT * (-n.num) + d.den) // (2::HUGEINT * d.den))
-           END AS BIGINT) / 1000000.0 AS acf
-    FROM num n JOIN den d USING (event_type)
-    """
-
-
-@register("events_acf_daily_lags", oracle=_acf_oracle())
-def events_acf_daily_lags(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Autocorrelation of the daily event-count series at lags 1..7,
-    per event type — the seasonality detector (a weekly cycle shows as
-    a lag-7 peak) feeding forecasting and anomaly baselines.
-
-    Exactness: with the series mean-centered by cross-multiplication
-    (z_t = n*y_t - S, integers — no fractional mean anywhere), the ACF
-    is sum(z_t * z_{t+l}) / sum(z_t^2), two exact decimal sums and one
-    half-up ratio. Scale: the raw corpus collapses to a
-    |event_types| x |days| series in one partial-aggregated groupBy;
-    lag pairing is a self-join on the day index of that BOUNDED series
-    (days grow with time, not with data volume), broadcastable at any
-    corpus size.
-    """
-    from ..functions.exact import round_big_int_ratio
-
-    t = Tables(spark, sf_dir)
-    daily = (
-        t.events.select("event_type", F.to_date("ts").alias("d"))
-        .groupBy("event_type", "d")
-        .agg(F.count(F.lit(1)).alias("y"))
-    )
-    w = Window.partitionBy("event_type")
-    idx = daily.select(
-        "event_type",
-        "y",
-        F.row_number().over(w.orderBy("d")).alias("i"),
-        F.count(F.lit(1)).over(w).alias("n"),
-        F.sum("y").over(w).alias("s"),
-    )
-    cent = idx.select(
-        "event_type",
-        "i",
-        "n",
-        (dec38(F.col("n")) * dec38(F.col("y")) - dec38(F.col("s"))).alias("z"),
-    )
-    lags = spark.range(1, ACF_MAX_LAG + 1).select(F.col("id").alias("lag"))
-    b = cent.select(
-        F.col("event_type").alias("et_b"), F.col("i").alias("i_b"), F.col("z").alias("z_b")
-    )
-    num = (
-        cent.crossJoin(F.broadcast(lags))
-        .join(
-            b,
-            (F.col("et_b") == F.col("event_type"))
-            & (F.col("i_b") == F.col("i") + F.col("lag")),
-        )
-        .groupBy("event_type", "lag", "n")
-        .agg(F.sum(F.col("z") * F.col("z_b")).alias("num"))
-    )
-    den = cent.groupBy("event_type").agg(F.sum(F.col("z") * F.col("z")).alias("den"))
-    return (
-        num.join(F.broadcast(den), "event_type")
-        .select(
-            "event_type",
-            "lag",
-            F.col("n").alias("n_days"),
-            round_big_int_ratio(F.col("num"), F.col("den")).alias("acf"),
-        )
     )
 
 
@@ -1029,176 +927,4 @@ def ml_decision_stump(spark: SparkSession, sf_dir: str) -> DataFrame:
             dec38(F.greatest(b["posl"], b["negl"])) + dec38(F.greatest(b["posr"], b["negr"])),
             dec38(F.col("nt")),
         ).alias("stump_accuracy"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# 17. Holt linear-trend smoothing of the daily series
-# ---------------------------------------------------------------------------
-
-HOLT_ALPHA = 0.5    # exactly representable binary fractions: the
-HOLT_BETA = 0.25    # smoothing recurrences stay bit-exact trivially
-
-
-def _holt_oracle() -> str:
-    return f"""
-    WITH RECURSIVE daily AS (
-      SELECT event_type, CAST(ts AS DATE) AS d,
-             CAST(CAST(sum(CAST(floor(value * 100.0 + 0.5) AS BIGINT)) AS BIGINT)
-                  AS DOUBLE) AS y
-      FROM events GROUP BY 1, 2
-    ), idx AS (
-      SELECT event_type, y,
-             row_number() OVER (PARTITION BY event_type ORDER BY d) AS i,
-             CAST(count(*) OVER (PARTITION BY event_type) AS BIGINT) AS n
-      FROM daily
-    ), rec AS (
-      SELECT event_type, 1::BIGINT AS i, n, y AS level, 0.0::DOUBLE AS trend
-      FROM idx WHERE i = 1
-      UNION ALL
-      SELECT r.event_type, r.i + 1, r.n,
-             {HOLT_ALPHA!r} * x.y
-               + {1.0 - HOLT_ALPHA!r} * (r.level + r.trend),
-             {HOLT_BETA!r} * (({HOLT_ALPHA!r} * x.y
-                               + {1.0 - HOLT_ALPHA!r} * (r.level + r.trend))
-                              - r.level)
-               + {1.0 - HOLT_BETA!r} * r.trend
-      FROM rec r JOIN idx x ON x.event_type = r.event_type AND x.i = r.i + 1
-    )
-    SELECT event_type, n AS n_days,
-           CAST(floor(level + 0.5) AS BIGINT) AS level_cents,
-           CAST(floor(trend * 100.0 + 0.5) AS BIGINT) AS trend_cents_q2,
-           CAST(floor((level + trend) + 0.5) AS BIGINT) AS forecast_cents
-    FROM rec WHERE i = n
-    """
-
-
-@register("events_holt_linear_fit", oracle=_holt_oracle())
-def events_holt_linear_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Holt's linear-trend exponential smoothing over the daily revenue
-    series per event type — level + trend state after a full pass, and
-    the one-step-ahead forecast: the classical operational forecast
-    (EWMA tracks level only; this tracks drift too).
-
-    The recurrence is inherently sequential, so it runs where
-    sequential is FREE: the corpus collapses to the bounded
-    |event_types| x |days| series, which collects into a per-type
-    ordered array and folds once through a runtime higher-order
-    aggregate (level', trend' per step). Smoothing constants are exact
-    binary fractions (0.5, 0.25), every update is a correctly-rounded
-    double chain identical on both engines (the DuckDB twin is a
-    recursive CTE executing the same arithmetic), and outputs quantize
-    to integer cents. No window over raw rows, no driver loop.
-    """
-    t = Tables(spark, sf_dir)
-    daily = (
-        t.events.select(
-            "event_type",
-            F.to_date("ts").alias("d"),
-            F.floor(F.col("value") * F.lit(100.0) + F.lit(0.5))
-            .cast("long")
-            .alias("c_row"),
-        )
-        .groupBy("event_type", "d")
-        .agg(F.sum("c_row").cast("double").alias("y"))
-    )
-    series = daily.groupBy("event_type").agg(
-        F.transform(
-            F.sort_array(F.collect_list(F.struct("d", "y"))), lambda s: s["y"]
-        ).alias("ys")
-    )
-    ys = F.col("ys")
-    a, b = HOLT_ALPHA, HOLT_BETA
-    init = F.struct(
-        F.element_at(ys, 1).alias("level"), F.lit(0.0).alias("trend")
-    )
-
-    def step(acc, y):
-        new_level = F.lit(a) * y + F.lit(1.0 - a) * (acc["level"] + acc["trend"])
-        new_trend = F.lit(b) * (new_level - acc["level"]) + F.lit(1.0 - b) * acc[
-            "trend"
-        ]
-        return F.struct(new_level.alias("level"), new_trend.alias("trend"))
-
-    fit = F.aggregate(F.slice(ys, 2, F.size(ys)), init, step)
-    return series.select(
-        "event_type",
-        F.size(ys).cast("long").alias("n_days"),
-        F.floor(fit["level"] + F.lit(0.5)).cast("long").alias("level_cents"),
-        F.floor(fit["trend"] * F.lit(100.0) + F.lit(0.5))
-        .cast("long")
-        .alias("trend_cents_q2"),
-        F.floor((fit["level"] + fit["trend"]) + F.lit(0.5))
-        .cast("long")
-        .alias("forecast_cents"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# 18. Poisson rate test between the two halves of the time range
-# ---------------------------------------------------------------------------
-
-
-def _poisson_oracle() -> str:
-    return """
-    WITH e AS (
-      SELECT event_type, epoch_us(ts) AS us FROM events
-    ), b AS (SELECT min(us) + max(us) AS lohi FROM e),
-    k AS (
-      SELECT event_type,
-             CAST(sum(CASE WHEN us * 2 <= lohi THEN 1 ELSE 0 END) AS BIGINT) AS k1,
-             CAST(sum(CASE WHEN us * 2 > lohi THEN 1 ELSE 0 END) AS BIGINT) AS k2
-      FROM e CROSS JOIN b GROUP BY event_type
-    )
-    SELECT event_type, k1, k2,
-           CASE WHEN k1 + k2 > 0 THEN
-             CAST(floor(CAST(k1 - k2 AS DOUBLE)
-                        / sqrt(CAST(k1 + k2 AS DOUBLE))
-                        * 1000000.0 + 0.5) AS BIGINT) / 1000000.0
-           END AS z_rate
-    FROM k
-    """
-
-
-@register("events_poisson_rate_test", oracle=_poisson_oracle())
-def events_poisson_rate_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Poisson rate-change test per event type between the first and
-    second half of the time range: under H0 (constant rate with equal
-    exposure) k1 - k2 has variance k1 + k2, so z = (k1-k2)/sqrt(k1+k2)
-    — the event-COUNT drift monitor beside dq_psi_value_drift's
-    value-distribution drift (conditional-binomial normal
-    approximation).
-
-    One scan, one partial-aggregated conditional count per type, one
-    correctly-rounded sqrt expression from exact integers.
-    """
-    t = Tables(spark, sf_dir)
-    e = t.events.select("event_type", F.unix_micros(F.col("ts")).alias("us"))
-    b = e.agg((F.min("us") + F.max("us")).alias("lohi"))
-    k = (
-        e.crossJoin(F.broadcast(b))
-        .groupBy("event_type")
-        .agg(
-            F.sum(F.when(F.col("us") * 2 <= F.col("lohi"), 1).otherwise(0)).alias(
-                "k1"
-            ),
-            F.sum(F.when(F.col("us") * 2 > F.col("lohi"), 1).otherwise(0)).alias(
-                "k2"
-            ),
-        )
-    )
-    z = (
-        F.floor(
-            (F.col("k1") - F.col("k2")).cast("double")
-            / F.sqrt((F.col("k1") + F.col("k2")).cast("double"))
-            * F.lit(1e6)
-            + F.lit(0.5)
-        ).cast("long")
-        / F.lit(1e6)
-    )
-    return k.select(
-        "event_type",
-        "k1",
-        "k2",
-        F.when(F.col("k1") + F.col("k2") > 0, z).alias("z_rate"),
     )

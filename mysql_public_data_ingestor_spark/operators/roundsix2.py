@@ -20,6 +20,9 @@ burstiness B=(σ−μ)/(σ+μ): Goh & Barabási 2008).
 ``operators/stats_dist.py``; ``stats_cramers_v_priority_status`` and
 ``stats_odds_ratio_woolf`` live in ``operators/stats_tables.py`` with
 the other stats queries.
+
+``events_interarrival_burstiness`` lives in
+``operators/events_series.py`` with the other events queries.
 """
 
 from __future__ import annotations
@@ -168,91 +171,6 @@ def text_ttr_hapax_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
             "hapax_share"
         ),
     ).orderBy("lang")
-
-
-# ---------------------------------------------------------------------------
-# 6. Inter-arrival burstiness per event type
-# ---------------------------------------------------------------------------
-
-
-def _burstiness_oracle() -> str:
-    return """
-    WITH ordered AS (
-      SELECT event_type,
-             CAST(floor(epoch(ts)) AS BIGINT)
-               - lag(CAST(floor(epoch(ts)) AS BIGINT)) OVER (
-                   PARTITION BY event_type ORDER BY ts, event_id) AS gap
-      FROM events
-    ), agg AS (
-      SELECT event_type,
-             CAST(count(*) AS HUGEINT) AS n,
-             CAST(sum(gap) AS HUGEINT) AS s,
-             CAST(sum(gap::HUGEINT * gap) AS HUGEINT) AS q
-      FROM ordered WHERE gap IS NOT NULL GROUP BY 1
-    )
-    SELECT event_type,
-           CAST(n AS BIGINT) AS n_gaps,
-           CAST(((2000000::HUGEINT * s + n) // (2::HUGEINT * n)) AS BIGINT)
-             / 1000000.0 AS mean_gap_s,
-           CAST(floor((sqrt(CAST(n * q - s * s AS DOUBLE)) - CAST(s AS DOUBLE))
-                      / (sqrt(CAST(n * q - s * s AS DOUBLE)) + CAST(s AS DOUBLE))
-                      * 1000000.0 + 0.5) AS BIGINT) / 1000000.0 AS burstiness
-    FROM agg
-    ORDER BY event_type
-    """
-
-
-@register("events_interarrival_burstiness", oracle=_burstiness_oracle())
-def events_interarrival_burstiness(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Goh-Barabási burstiness B = (σ−μ)/(σ+μ) of inter-arrival times
-    per event type — B→−1 for clockwork arrivals, 0 for Poisson, →1
-    for extreme burst trains; the shape statistic behind rate-limit
-    and capacity planning that a plain mean gap hides.
-
-    Exactness: gaps are integer epoch-second diffs; n·Σg²−S² is exact
-    in decimal(38,0)/HUGEINT, and B simplifies so the group size n
-    cancels: B = (sqrt(nΣg²−S²) − S)/(sqrt(nΣg²−S²) + S). The one
-    decimal→double cast is correctly rounded on both engines, and
-    sqrt/divide are IEEE-correct single roundings — bit-identical
-    before the 1e-6 quantization.
-
-    Scale: the lag window partitions by event_type (parallel across
-    types; within a type the ordered pass is the semantics). At 100 TB
-    with few giant types, pre-bucket by (type, day) and difference at
-    day boundaries — the day-interior gaps dominate the moments.
-    """
-    t = Tables(spark, sf_dir)
-    w = Window.partitionBy("event_type").orderBy("ts", "event_id")
-    gaps = t.events.select(
-        "event_type",
-        (
-            F.unix_timestamp("ts")
-            - F.lag(F.unix_timestamp("ts")).over(w)
-        ).alias("gap"),
-    ).where(F.col("gap").isNotNull())
-    agg = gaps.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("gap").alias("s"),
-        F.sum(dec38(F.col("gap")) * dec38(F.col("gap"))).alias("q"),
-    )
-    from ..functions.exact import round_big_int_ratio
-
-    var_num = (dec38(F.col("n")) * F.col("q")
-               - dec38(F.col("s")) * dec38(F.col("s"))).cast("double")
-    sd = F.sqrt(var_num)
-    s_d = F.col("s").cast("double")
-    b = (sd - s_d) / (sd + s_d)
-    return agg.select(
-        "event_type",
-        F.col("n").alias("n_gaps"),
-        round_big_int_ratio(dec38(F.col("s")), dec38(F.col("n"))).alias(
-            "mean_gap_s"
-        ),
-        (F.floor(b * F.lit(1_000_000.0) + F.lit(0.5)).cast("long")
-         / F.lit(1_000_000.0)).alias("burstiness"),
-    ).orderBy("event_type")
 
 
 # ---------------------------------------------------------------------------

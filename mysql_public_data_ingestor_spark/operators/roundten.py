@@ -14,6 +14,9 @@ method-of-moments fit (completing Weibull/NegBin/Gumbel).
 ``stats_page_trend_l`` lives in ``operators/stats_rank.py``;
 ``stats_gamma_latency_fit_moments`` lives in ``operators/stats_dist.py``
 with the other stats queries.
+
+``events_churn_hazard_by_tenure`` lives in ``operators/events_users.py``
+with the other events queries.
 """
 
 from __future__ import annotations
@@ -139,102 +142,6 @@ def sketch_linear_counting_users(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.abs(est.cast("long") - F.col("d_exact")), F.col("d_exact")
             ),
         ).alias("rel_error"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# 3. Discrete churn hazard by tenure week
-# ---------------------------------------------------------------------------
-
-HAZARD_MAX_W = 12
-
-
-def _hazard_oracle() -> str:
-    from ..functions.exact import sql_round_int_ratio
-
-    return f"""
-    WITH u AS (
-      SELECT user_id,
-             date_trunc('week', min(ts)) AS first_w,
-             date_trunc('week', max(ts)) AS last_w
-      FROM events GROUP BY user_id
-    ), mx AS (SELECT date_trunc('week', max(ts)) AS max_w FROM events),
-    ua AS (
-      SELECT CAST(date_diff('week', first_w, last_w) AS BIGINT) AS tenure,
-             CAST(date_diff('week', first_w, max_w) AS BIGINT) AS age
-      FROM u, mx
-    ), ws AS (SELECT CAST(unnest(range(0, {HAZARD_MAX_W + 1})) AS BIGINT) AS w),
-    cells AS (
-      SELECT ws.w,
-             CAST(sum(CASE WHEN ua.age >= ws.w AND ua.tenure >= ws.w
-                           THEN 1 ELSE 0 END) AS BIGINT) AS at_risk,
-             CAST(sum(CASE WHEN ua.tenure = ws.w AND ua.age > ws.w
-                           THEN 1 ELSE 0 END) AS BIGINT) AS churned
-      FROM ws, ua GROUP BY ws.w
-    )
-    SELECT w, at_risk, churned,
-           CASE WHEN at_risk > 0 THEN
-             {sql_round_int_ratio('churned', 'at_risk')}
-           END AS hazard
-    FROM cells ORDER BY w
-    """
-
-
-@register("events_churn_hazard_by_tenure", oracle=_hazard_oracle())
-def events_churn_hazard_by_tenure(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Discrete churn hazard by tenure week: h(w) = users last seen
-    exactly w weeks after their first activity (with enough
-    subsequent observation time to call it churn, not censoring)
-    over users still at risk at week w — the DERIVATIVE view of the
-    survival family (``stats_km_log_survival`` integrates survival;
-    ``events_retention_decay_fit`` fits its envelope; the hazard
-    curve is where "week-2 cliff" product decisions are read off).
-
-    The censoring rule is the observable-triangle discipline the
-    retention fit uses: a user only counts as churned at w if their
-    first-activity cohort is old enough (age > w) to have shown a
-    later event. One user-level min/max aggregate; the per-week
-    counts are a 13-row broadcast non-equi probe of the user table
-    (conditional partial aggregation, no sort); hazards are exact
-    half-up ratios.
-    """
-    from ..functions.exact import round_int_ratio
-
-    t = Tables(spark, sf_dir)
-    u = t.events.groupBy("user_id").agg(
-        F.date_trunc("week", F.min("ts")).alias("first_w"),
-        F.date_trunc("week", F.max("ts")).alias("last_w"),
-    )
-    mx = t.events.agg(F.date_trunc("week", F.max("ts")).alias("max_w"))
-    ua = u.crossJoin(F.broadcast(mx)).select(
-        (F.datediff(F.col("last_w"), F.col("first_w")) / 7).cast("long").alias(
-            "tenure"
-        ),
-        (F.datediff(F.col("max_w"), F.col("first_w")) / 7).cast("long").alias("age"),
-    )
-    ws = spark.range(HAZARD_MAX_W + 1).select(F.col("id").alias("w"))
-    cells = (
-        ua.crossJoin(F.broadcast(ws))
-        .groupBy("w")
-        .agg(
-            F.sum(
-                F.when((F.col("age") >= F.col("w")) & (F.col("tenure") >= F.col("w")), 1)
-                .otherwise(0)
-            ).alias("at_risk"),
-            F.sum(
-                F.when((F.col("tenure") == F.col("w")) & (F.col("age") > F.col("w")), 1)
-                .otherwise(0)
-            ).alias("churned"),
-        )
-    )
-    return cells.select(
-        "w",
-        "at_risk",
-        "churned",
-        F.when(
-            F.col("at_risk") > 0,
-            round_int_ratio(F.col("churned"), F.col("at_risk")),
-        ).alias("hazard"),
     )
 
 

@@ -28,6 +28,13 @@ in ``operators/stats_rank.py``; ``stats_total_variation_segment_pairs``
 lives in ``operators/stats_dist.py``;
 ``stats_mantel_haenszel_priority_nation`` lives in
 ``operators/stats_tables.py`` with the other stats queries.
+
+``events_asof_nearest_attribution`` and
+``events_funnel_path_signatures`` live in
+``operators/events_sequence.py``; ``events_cohort_retention_matrix``,
+``events_rfm_transition_matrix`` and
+``events_user_activity_lorenz_deciles`` live in
+``operators/events_users.py`` with the other events queries.
 """
 
 from __future__ import annotations
@@ -192,79 +199,6 @@ def sketch_ddsketch_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# 2. Weekly cohort retention triangle
-# ---------------------------------------------------------------------------
-
-COHORT_MAX_OFFSET = 7
-
-
-def _cohort_oracle() -> str:
-    from ..functions.exact import sql_round_int_ratio
-
-    return f"""
-    WITH uw AS (
-      SELECT DISTINCT user_id, date_trunc('week', ts)::DATE AS week
-      FROM events
-    ), fw AS (
-      SELECT user_id, min(week) AS cohort FROM uw GROUP BY user_id
-    ), act AS (
-      SELECT f.cohort,
-             CAST(datediff('day', f.cohort, u.week) // 7 AS BIGINT) AS week_offset,
-             CAST(count(*) AS BIGINT) AS n_active
-      FROM uw u JOIN fw f USING (user_id)
-      WHERE datediff('day', f.cohort, u.week) // 7 <= {COHORT_MAX_OFFSET}
-      GROUP BY 1, 2
-    ), sizes AS (
-      SELECT cohort, CAST(count(*) AS BIGINT) AS cohort_size
-      FROM fw GROUP BY cohort
-    )
-    SELECT strftime(a.cohort, '%Y-%m-%d') AS cohort_week, a.week_offset, a.n_active, s.cohort_size,
-           {sql_round_int_ratio('a.n_active', 's.cohort_size')} AS retention
-    FROM act a JOIN sizes s USING (cohort)
-    """
-
-
-@register("events_cohort_retention_matrix", oracle=_cohort_oracle())
-def events_cohort_retention_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Weekly cohort retention triangle: users bucketed by
-    first-active ISO week, then for each (cohort, week-offset <= 7)
-    the count and share still active — THE product-analytics retention
-    artifact (``events_dau_mau_stickiness`` is its one-number summary,
-    ``events_retention_decay_fit`` fits its decay; this is the matrix
-    both derive from).
-
-    One user-keyed shuffle produces both the distinct user-weeks and
-    each user's cohort (min week); the (cohort, offset) aggregate is
-    calendar-bounded (weeks x 8 offsets, independent of row count).
-    Week arithmetic is exact integer day-diffs over Monday-start
-    date_trunc weeks — identical convention both engines.
-    """
-    from ..functions.exact import round_int_ratio
-
-    t = Tables(spark, sf_dir)
-    uw = t.events.select(
-        "user_id", F.date_trunc("week", F.col("ts")).cast("date").alias("week")
-    ).distinct()
-    fw = uw.groupBy("user_id").agg(F.min("week").alias("cohort"))
-    off = (F.datediff(F.col("week"), F.col("cohort")) / 7).cast("long")
-    act = (
-        uw.join(fw, "user_id")
-        .select("cohort", off.alias("week_offset"))
-        .filter(F.col("week_offset") <= COHORT_MAX_OFFSET)
-        .groupBy("cohort", "week_offset")
-        .agg(F.count(F.lit(1)).alias("n_active"))
-    )
-    sizes = fw.groupBy("cohort").agg(F.count(F.lit(1)).alias("cohort_size"))
-    return act.join(sizes, "cohort").select(
-        F.date_format(F.col("cohort"), "yyyy-MM-dd").alias("cohort_week"),
-        "week_offset",
-        "n_active",
-        "cohort_size",
-        round_int_ratio(F.col("n_active"), F.col("cohort_size")).alias("retention"),
-    )
-
-
-# ---------------------------------------------------------------------------
 # 3. Stratified-sample representativeness audit
 # ---------------------------------------------------------------------------
 
@@ -381,106 +315,6 @@ def corpus_stratified_sample_audit(spark: SparkSession, sf_dir: str) -> DataFram
             ).alias("tvd"),
         )
     )
-
-
-# ---------------------------------------------------------------------------
-# 4. Session path-signature mining (first-4-event funnels)
-# ---------------------------------------------------------------------------
-
-PATHSIG_LEN = 4
-PATHSIG_TOPK = 20
-
-
-def _pathsig_oracle() -> str:
-    from ..functions.exact import sql_round_int_ratio
-
-    return f"""
-    WITH numbered AS (
-      SELECT user_id, event_type,
-             row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn
-      FROM events
-    ), per AS (
-      SELECT user_id,
-             CAST(count(*) AS BIGINT) AS n_events,
-             max(CASE WHEN rn = 1 THEN event_type END) AS e1,
-             max(CASE WHEN rn = 2 THEN event_type END) AS e2,
-             max(CASE WHEN rn = 3 THEN event_type END) AS e3,
-             max(CASE WHEN rn = 4 THEN event_type END) AS e4,
-             max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS conv
-      FROM numbered GROUP BY user_id
-    ), sig AS (
-      SELECT e1 || '>' || e2 || '>' || e3 || '>' || e4 AS signature,
-             CAST(count(*) AS BIGINT) AS n_users,
-             CAST(sum(conv) AS BIGINT) AS n_converted
-      FROM per
-      WHERE n_events >= {PATHSIG_LEN}
-        AND e1 IS NOT NULL AND e2 IS NOT NULL
-        AND e3 IS NOT NULL AND e4 IS NOT NULL
-      GROUP BY 1
-    )
-    SELECT signature, n_users, n_converted,
-           {sql_round_int_ratio('n_converted', 'n_users')} AS conversion
-    FROM sig ORDER BY n_users DESC, signature LIMIT {PATHSIG_TOPK}
-    """
-
-
-@register("events_funnel_path_signatures", oracle=_pathsig_oracle())
-def events_funnel_path_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Onboarding path-signature mining: the top observed
-    first-4-event paths across USER LIFETIMES, each with its user
-    count and conversion rate (did the user EVER purchase) — the
-    discovery complement of the fixed funnel
-    (``events_funnel_time_windowed`` checks ONE prescribed path; this
-    surfaces which opening journeys actually occur and which convert
-    — the onboarding-analysis artifact). Anchored at user start
-    rather than session start because the event stream's sessions are
-    near-singleton (max 3 events at fixture scale) while user
-    histories are long — the same miner re-anchors by changing one
-    partitioning key.
-
-    One user-keyed window ranks each user's history; the per-user
-    pivot (first four events + any-purchase flag) is one user-keyed
-    aggregate reusing the SAME shuffle; signature domain is
-    <= |event_types|^4, so the final aggregate and TakeOrdered top-k
-    are bounded. NULL parity is explicit: users with fewer than 4
-    events are filtered on BOTH engines (no concat_ws null-skipping).
-    """
-    from ..functions.exact import round_int_ratio
-
-    t = Tables(spark, sf_dir)
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    numbered = t.events.select("user_id", "ts", "event_id", "event_type").withColumn(
-        "rn", F.row_number().over(w)
-    )
-    per = numbered.groupBy("user_id").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        *[
-            F.max(F.when(F.col("rn") == i, F.col("event_type"))).alias(f"e{i}")
-            for i in range(1, PATHSIG_LEN + 1)
-        ],
-        F.max(F.when(F.col("event_type") == "purchase", 1).otherwise(0)).alias("conv"),
-    )
-    ok = per.filter(
-        (F.col("n_events") >= PATHSIG_LEN)
-        & F.col("e1").isNotNull()
-        & F.col("e2").isNotNull()
-        & F.col("e3").isNotNull()
-        & F.col("e4").isNotNull()
-    )
-    sig = (
-        ok.select(
-            F.concat_ws(">", "e1", "e2", "e3", "e4").alias("signature"), "conv"
-        )
-        .groupBy("signature")
-        .agg(F.count(F.lit(1)).alias("n_users"), F.sum("conv").alias("n_converted"))
-    )
-    out = sig.select(
-        "signature",
-        "n_users",
-        "n_converted",
-        round_int_ratio(F.col("n_converted"), F.col("n_users")).alias("conversion"),
-    )
-    return out.orderBy(F.col("n_users").desc(), "signature").limit(PATHSIG_TOPK)
 
 
 # ---------------------------------------------------------------------------
@@ -719,127 +553,6 @@ def dq_bloom_fpp_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n_probes") > 0,
             round_int_ratio(F.col("n_false_pos"), F.col("n_probes")),
         ).alias("fpp_measured"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# 10. Lorenz deciles of per-user event activity
-# ---------------------------------------------------------------------------
-
-
-def _lorenz_oracle() -> str:
-    from ..functions.exact import sql_round_big_int_ratio
-
-    return f"""
-    WITH freq AS (
-      SELECT user_id, CAST(count(*) AS BIGINT) AS c FROM events GROUP BY user_id
-    ), coc AS (
-      SELECT c, CAST(count(*) AS BIGINT) AS nu FROM freq GROUP BY c
-    ), cum AS (
-      SELECT a.c, a.nu,
-             CAST(sum(b.nu) AS BIGINT) AS cu,
-             CAST(sum(b.nu::HUGEINT * b.c) AS HUGEINT) AS ce
-      FROM coc a JOIN coc b ON b.c < a.c OR (b.c = a.c)
-      GROUP BY a.c, a.nu
-    ), tot AS (
-      SELECT CAST(sum(nu) AS BIGINT) AS u,
-             CAST(sum(nu::HUGEINT * c) AS HUGEINT) AS e
-      FROM coc
-    ), dec AS (SELECT CAST(unnest(range(1, 11)) AS BIGINT) AS decile),
-    per AS (
-      SELECT d.decile,
-             ((d.decile - 1) * t.u) // 10 AS lo,
-             (d.decile * t.u) // 10 AS hi,
-             t.u, t.e
-      FROM dec d, tot t
-    ), ev AS (
-      SELECT p.decile, p.hi, p.lo, p.e,
-             CAST(sum(greatest(0, least(c.cu, p.hi) - greatest(c.cu - c.nu, p.lo))
-                      ::HUGEINT * c.c) AS HUGEINT) AS events_d,
-             CAST(sum(greatest(0, least(c.cu, p.hi) - (c.cu - c.nu))
-                      ::HUGEINT * c.c) AS HUGEINT) AS events_cum
-      FROM per p, cum c
-      GROUP BY p.decile, p.hi, p.lo, p.e
-    )
-    SELECT decile, CAST(hi - lo AS BIGINT) AS n_users,
-           CASE WHEN e > 0 THEN
-             {sql_round_big_int_ratio('events_d', 'e')}
-           END AS events_share,
-           CASE WHEN e > 0 THEN
-             {sql_round_big_int_ratio('events_cum', 'e')}
-           END AS cum_share
-    FROM ev ORDER BY decile
-    """
-
-
-@register("events_user_activity_lorenz_deciles", oracle=_lorenz_oracle())
-def events_user_activity_lorenz_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Lorenz curve of user activity in exact deciles: users ranked
-    ascending by event count, split at exact nearest-rank decile
-    boundaries (tie groups SPLIT exactly — users within a tie group
-    are exchangeable, so the split is well-defined integer
-    arithmetic), each decile reporting its share and running share of
-    all events — the user-concentration artifact behind "the top 10%
-    of users generate X% of activity", the per-user sibling of
-    ``stats_gini_by_nation``'s revenue curve.
-
-    The decile machinery never ranks raw users: everything runs over
-    the COUNT-OF-COUNTS table (distinct activity levels — the
-    diag_key_skew_profile domain, ~sqrt(N) under Zipf), cumulated by
-    a broadcast non-equi self-join and intersected with the 10
-    boundary intervals by clamped integer overlap. No window, no
-    global sort, 10 output rows.
-    """
-    from ..functions.exact import round_big_int_ratio
-
-    t = Tables(spark, sf_dir)
-    freq = t.events.groupBy("user_id").agg(F.count(F.lit(1)).alias("c"))
-    coc = freq.groupBy("c").agg(F.count(F.lit(1)).alias("nu"))
-    c2 = coc.select(F.col("c").alias("c2"), F.col("nu").alias("nu2"))
-    cum = (
-        coc.join(F.broadcast(c2), F.col("c2") <= F.col("c"))
-        .groupBy("c", "nu")
-        .agg(
-            F.sum("nu2").alias("cu"),
-            F.sum(dec38(F.col("nu2")) * F.col("c2")).alias("ce"),
-        )
-    )
-    tot = coc.agg(
-        F.sum("nu").alias("u"), F.sum(dec38(F.col("nu")) * F.col("c")).alias("e")
-    )
-    dec = spark.range(1, 11).select(F.col("id").alias("decile"))
-    per = dec.crossJoin(F.broadcast(tot)).select(
-        "decile",
-        F.expr("((decile - 1) * u) div 10").alias("lo"),
-        F.expr("(decile * u) div 10").alias("hi"),
-        "u",
-        "e",
-    )
-    ov = F.greatest(
-        F.lit(0).cast("long"),
-        F.least(F.col("cu"), F.col("hi")) - F.greatest(F.col("cu") - F.col("nu"), F.col("lo")),
-    )
-    ov_cum = F.greatest(
-        F.lit(0).cast("long"),
-        F.least(F.col("cu"), F.col("hi")) - (F.col("cu") - F.col("nu")),
-    )
-    ev = (
-        per.crossJoin(F.broadcast(cum))
-        .groupBy("decile", "hi", "lo", "e")
-        .agg(
-            F.sum(dec38(ov) * F.col("c")).alias("events_d"),
-            F.sum(dec38(ov_cum) * F.col("c")).alias("events_cum"),
-        )
-    )
-    return ev.select(
-        "decile",
-        (F.col("hi") - F.col("lo")).cast("long").alias("n_users"),
-        F.when(
-            F.col("e") > 0, round_big_int_ratio(F.col("events_d"), F.col("e"))
-        ).alias("events_share"),
-        F.when(
-            F.col("e") > 0, round_big_int_ratio(F.col("events_cum"), F.col("e"))
-        ).alias("cum_share"),
     )
 
 
@@ -1455,112 +1168,6 @@ def dedup_lsh_band_tuning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# 19. Engagement-class transition matrix across history halves
-# ---------------------------------------------------------------------------
-
-RFM_MID_MIN = 30
-RFM_HIGH_MIN = 38
-
-
-def _rfm_class_sql(col: str) -> str:
-    return (
-        f"CASE WHEN {col} >= {RFM_HIGH_MIN} THEN 'high' "
-        f"WHEN {col} >= {RFM_MID_MIN} THEN 'mid' "
-        f"WHEN {col} >= 1 THEN 'low' ELSE 'gone' END"
-    )
-
-
-def _rfm_transition_oracle() -> str:
-    from ..functions.exact import sql_round_int_ratio
-
-    return f"""
-    WITH bounds AS (
-      SELECT (epoch_us(min(ts)) + epoch_us(max(ts))) // 2 AS cut_us FROM events
-    ), per AS (
-      SELECT e.user_id,
-             CAST(sum(CASE WHEN epoch_us(e.ts) < b.cut_us THEN 1 ELSE 0 END)
-                  AS BIGINT) AS n1,
-             CAST(sum(CASE WHEN epoch_us(e.ts) >= b.cut_us THEN 1 ELSE 0 END)
-                  AS BIGINT) AS n2
-      FROM events e, bounds b
-      GROUP BY e.user_id
-    ), classed AS (
-      SELECT {_rfm_class_sql('n1')} AS class_from,
-             {_rfm_class_sql('n2')} AS class_to
-      FROM per WHERE n1 >= 1
-    ), cells AS (
-      SELECT class_from, class_to, CAST(count(*) AS BIGINT) AS n_users
-      FROM classed GROUP BY 1, 2
-    ), rowtot AS (
-      SELECT class_from, CAST(sum(n_users) AS BIGINT) AS n_from
-      FROM cells GROUP BY class_from
-    )
-    SELECT c.class_from, c.class_to, c.n_users, r.n_from,
-           {sql_round_int_ratio('c.n_users', 'r.n_from')} AS share
-    FROM cells c JOIN rowtot r USING (class_from)
-    ORDER BY c.class_from, c.class_to
-    """
-
-
-@register("events_rfm_transition_matrix", oracle=_rfm_transition_oracle())
-def events_rfm_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Engagement-class transition matrix: users classed by activity
-    volume (low 1-29 / mid 30-37 / high 38+ events — the terciles of
-    the fixture's stable ~33-events-per-half-window activity) in the FIRST half of
-    the observed window, cross-tabulated against their class in the
-    second half ('gone' = zero events) — the Markov view of
-    engagement the RFM segmentation snapshot
-    (``stats_rfm_segmentation``) cannot show: WHERE users move, not
-    just where they sit; the share column per source class is the
-    empirical transition kernel that churn/upsell models consume.
-
-    The window midpoint is exact integer microsecond arithmetic from
-    one global min/max aggregate (broadcast back); both half-counts
-    come from ONE user-keyed aggregate with conditional sums (no
-    second scan, no window); the matrix is a <= 4x4 final aggregate
-    and the shares exact half-up ratios.
-    """
-    from ..functions.exact import round_int_ratio
-
-    t = Tables(spark, sf_dir)
-    bounds = t.events.agg(
-        F.expr("(unix_micros(min(ts)) + unix_micros(max(ts))) div 2").alias("cut_us")
-    )
-    per = (
-        t.events.select("user_id", F.unix_micros(F.col("ts")).alias("us"))
-        .crossJoin(F.broadcast(bounds))
-        .groupBy("user_id")
-        .agg(
-            F.sum(F.when(F.col("us") < F.col("cut_us"), 1).otherwise(0)).alias("n1"),
-            F.sum(F.when(F.col("us") >= F.col("cut_us"), 1).otherwise(0)).alias("n2"),
-        )
-    )
-
-    def cls(col):
-        return (
-            F.when(F.col(col) >= RFM_HIGH_MIN, "high")
-            .when(F.col(col) >= RFM_MID_MIN, "mid")
-            .when(F.col(col) >= 1, "low")
-            .otherwise("gone")
-        )
-
-    classed = per.filter(F.col("n1") >= 1).select(
-        cls("n1").alias("class_from"), cls("n2").alias("class_to")
-    )
-    cells = classed.groupBy("class_from", "class_to").agg(
-        F.count(F.lit(1)).alias("n_users")
-    )
-    rowtot = cells.groupBy("class_from").agg(F.sum("n_users").alias("n_from"))
-    return cells.join(F.broadcast(rowtot), "class_from").select(
-        "class_from",
-        "class_to",
-        "n_users",
-        "n_from",
-        round_int_ratio(F.col("n_users"), F.col("n_from")).alias("share"),
-    )
-
-
-# ---------------------------------------------------------------------------
 # 20. k-map re-identification risk audit
 # ---------------------------------------------------------------------------
 
@@ -2093,92 +1700,4 @@ def sketch_kmv_difference_users(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("d_true") > 0,
             round_int_ratio(F.abs(est - F.col("d_true")), F.col("d_true")),
         ).alias("rel_error"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# 25. Nearest-event as-of attribution (purchase -> closest view)
-# ---------------------------------------------------------------------------
-
-ASOF_NEAR_EDGES_MIN = (1, 5, 30, 120, 1440)  # minutes; last bucket = beyond
-
-
-def _asof_near_bucket_sql(col: str) -> str:
-    cases = " ".join(
-        f"WHEN {col} < {m}::BIGINT * 60000000 THEN {i}"
-        for i, m in enumerate(ASOF_NEAR_EDGES_MIN)
-    )
-    return f"CASE {cases} ELSE {len(ASOF_NEAR_EDGES_MIN)} END"
-
-
-def _asof_nearest_oracle() -> str:
-    from ..functions.exact import sql_round_int_ratio
-
-    return f"""
-    WITH p AS (
-      SELECT user_id, event_id, epoch_us(ts) AS us
-      FROM events WHERE event_type = 'purchase'
-    ), v AS (
-      SELECT user_id, epoch_us(ts) AS us
-      FROM events WHERE event_type = 'view'
-    ), nearest AS (
-      SELECT p.user_id, p.event_id,
-             min(abs(p.us - v.us)) AS gap_us
-      FROM p JOIN v USING (user_id)
-      GROUP BY p.user_id, p.event_id
-    ), bucketed AS (
-      SELECT CAST({_asof_near_bucket_sql('gap_us')} AS BIGINT) AS bucket,
-             CAST(count(*) AS BIGINT) AS n_purchases
-      FROM nearest GROUP BY 1
-    ), tot AS (SELECT CAST(sum(n_purchases) AS BIGINT) AS t FROM bucketed)
-    SELECT b.bucket, b.n_purchases,
-           {sql_round_int_ratio('b.n_purchases', 't.t')} AS share
-    FROM bucketed b, tot t ORDER BY b.bucket
-    """
-
-
-@register("events_asof_nearest_attribution", oracle=_asof_nearest_oracle())
-def events_asof_nearest_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Nearest-neighbor as-of attribution: for every purchase, the
-    time gap to the user's CLOSEST view in either direction, bucketed
-    into a fixed minute ladder (<1m / <5m / <30m / <2h / <1d /
-    beyond) — the NEAREST-direction member of the as-of join family
-    (``events_scd_asof_snapshot`` is backward-only; last-touch
-    attribution is backward with a horizon; "nearest" is the
-    symmetric variant ad-attribution models use when view logs and
-    purchase logs have clock skew in either direction).
-
-    The nearest gap per purchase is a user-keyed equi-join between
-    the two PER-USER event subsets (pair volume bounded by per-user
-    activity squared — the sessionization family's standing
-    assumption, not data-scaled), reduced by a (user, purchase)
-    min aggregate; the histogram is a literal CASE ladder, <= 6 rows
-    out, shares exact half-up ratios.
-    """
-    from ..functions.exact import round_int_ratio
-
-    t = Tables(spark, sf_dir)
-    p = t.events.filter(F.col("event_type") == "purchase").select(
-        "user_id", "event_id", F.unix_micros(F.col("ts")).alias("us_p")
-    )
-    v = t.events.filter(F.col("event_type") == "view").select(
-        "user_id", F.unix_micros(F.col("ts")).alias("us_v")
-    )
-    nearest = (
-        p.join(v, "user_id")
-        .groupBy("user_id", "event_id")
-        .agg(F.min(F.abs(F.col("us_p") - F.col("us_v"))).alias("gap_us"))
-    )
-    bucket = F.when(F.col("gap_us") < ASOF_NEAR_EDGES_MIN[0] * 60_000_000, 0)
-    for i, m in enumerate(ASOF_NEAR_EDGES_MIN[1:], start=1):
-        bucket = bucket.when(F.col("gap_us") < m * 60_000_000, i)
-    bucket = bucket.otherwise(len(ASOF_NEAR_EDGES_MIN)).cast("long")
-    bucketed = nearest.select(bucket.alias("bucket")).groupBy("bucket").agg(
-        F.count(F.lit(1)).alias("n_purchases")
-    )
-    tot = bucketed.agg(F.sum("n_purchases").alias("t"))
-    return bucketed.crossJoin(F.broadcast(tot)).select(
-        "bucket",
-        "n_purchases",
-        round_int_ratio(F.col("n_purchases"), F.col("t")).alias("share"),
     )

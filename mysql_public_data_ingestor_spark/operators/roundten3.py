@@ -3,16 +3,14 @@ warehouse-statistics, ML-quality, time-series, text and corpus
 families (VERDICT r9 item 5 follow-through — filling the remaining
 driver-window slots under the full gate discipline).
 
-1.  ``events_ccf_types_lags`` — lagged cross-correlation between the
-    view and purchase daily series (signed r² at lags −7..7).
-2.  ``ml_isotonic_calibration_pav`` — closed-form isotonic (PAV)
+1.  ``ml_isotonic_calibration_pav`` — closed-form isotonic (PAV)
     calibration of the hashed classifier over a bounded score-bin
     grid via the max-min prefix-average identity.
-3.  ``ml_fairness_threshold_gaps`` — per-language selection-rate /
+2.  ``ml_fairness_threshold_gaps`` — per-language selection-rate /
     TPR / FPR gaps vs global at a fixed decision threshold.
-4.  ``text_keyword_log_odds`` — Monroe et al. informative-Dirichlet
+3.  ``text_keyword_log_odds`` — Monroe et al. informative-Dirichlet
     weighted log-odds terms separating the two largest languages.
-5.  ``corpus_truncation_loss_curve`` — token loss of chunk-and-drop
+4.  ``corpus_truncation_loss_curve`` — token loss of chunk-and-drop
     packing at a context-length ladder.
 
 ``stats_durbin_watson_daily`` and ``stats_hurst_rs_daily`` live in
@@ -29,6 +27,12 @@ unpartitioned window over data-scaled rows.
 ``stats_g_test_dow_type`` lives in ``operators/stats_tables.py``;
 ``stats_rayleigh_hour_uniformity`` lives in ``operators/stats_dist.py``
 with the other stats queries.
+
+``events_markov_entropy_rate`` lives in
+``operators/events_sequence.py``; ``events_ccf_types_lags`` and
+``events_decayed_value_halflife`` live in
+``operators/events_series.py``; ``events_type_audience_jaccard`` lives
+in ``operators/events_users.py`` with the other events queries.
 """
 
 from __future__ import annotations
@@ -40,168 +44,6 @@ from pyspark.sql.window import Window
 from ..functions.exact import dec38, halfup_div, sql_halfup_div
 from ..registry import register
 from ..tables import Tables
-
-
-# ---------------------------------------------------------------------------
-# 3. Cross-correlation between the view and purchase daily series
-# ---------------------------------------------------------------------------
-
-CCF_MAX_LAG = 7
-CCF_TYPE_X = "view"
-CCF_TYPE_Y = "purchase"
-
-
-def _ccf_oracle() -> str:
-    from ..functions.exact import sql_round_big_int_ratio
-
-    return f"""
-    WITH days AS (
-      SELECT DISTINCT CAST(ts AS DATE) AS d FROM events
-    ), cx AS (
-      SELECT CAST(ts AS DATE) AS d, CAST(count(*) AS BIGINT) AS c
-      FROM events WHERE event_type = '{CCF_TYPE_X}' GROUP BY 1
-    ), cy AS (
-      SELECT CAST(ts AS DATE) AS d, CAST(count(*) AS BIGINT) AS c
-      FROM events WHERE event_type = '{CCF_TYPE_Y}' GROUP BY 1
-    ), filled AS (
-      SELECT days.d, coalesce(cx.c, 0) AS x, coalesce(cy.c, 0) AS y
-      FROM days LEFT JOIN cx ON cx.d = days.d LEFT JOIN cy ON cy.d = days.d
-    ), idx AS (
-      SELECT a.d, a.x, a.y, CAST(count(*) AS BIGINT) AS k
-      FROM filled a JOIN filled b ON b.d <= a.d
-      GROUP BY a.d, a.x, a.y
-    ), tot AS (
-      SELECT CAST(count(*) AS BIGINT) AS n,
-             CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy
-      FROM idx
-    ), cent AS (
-      SELECT i.k,
-             t.n * i.x - t.sx AS zx,
-             t.n * i.y - t.sy AS zy
-      FROM idx i, tot t
-    ), den AS (
-      SELECT CAST(sum(zx::HUGEINT * zx) AS HUGEINT) AS zxx,
-             CAST(sum(zy::HUGEINT * zy) AS HUGEINT) AS zyy
-      FROM cent
-    ), lags AS (
-      SELECT CAST(unnest(range(-{CCF_MAX_LAG}, {CCF_MAX_LAG + 1})) AS BIGINT) AS l
-    ), num AS (
-      SELECT l.l AS lag, CAST(count(*) AS BIGINT) AS n_pairs,
-             CAST(sum(a.zx::HUGEINT * b.zy) AS HUGEINT) AS num
-      FROM cent a JOIN lags l ON true
-      JOIN cent b ON b.k = a.k + l.l
-      GROUP BY l.l
-    )
-    SELECT n.lag, n.n_pairs,
-           CASE WHEN d.zxx > 0 AND d.zyy > 0 THEN
-             {sql_round_big_int_ratio(
-                 '(CASE WHEN n.num < 0 THEN -1 ELSE 1 END) * n.num * n.num',
-                 'd.zxx * d.zyy')}
-           END AS ccf_sq
-    FROM num n, den d
-    """
-
-
-@register("events_ccf_types_lags", oracle=_ccf_oracle())
-def events_ccf_types_lags(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Lagged cross-correlation between the zero-filled daily VIEW and
-    PURCHASE count series at lags −7..+7 — does view traffic LEAD
-    purchases (positive-lag peak) or trail it? The two-series
-    complement of events_acf_daily_lags, and the classical lead-lag
-    screen before any transfer-function / attribution model.
-
-    CCF normalization needs √(Sxx·Syy), so to stay exact the query
-    reports the SIGNED SQUARED cross-correlation sign(r)·r² =
-    sign(num)·num²/(Zxx·Zyy) — a ratio of exact integers (centered
-    values z = n·x − Σx, the ACF op's scaling), quantized once by
-    round_big_int_ratio; |r| = √|ccf_sq| for display downstream.
-    num² ≤ (n·z_max²)² ≈ 10²⁸ at sf1×10 — inside HUGEINT/decimal(38).
-
-    Scale shape: the fact scan partial-aggregates per (type, day)
-    BEFORE anything joins; the day spine and both series are
-    calendar-bounded (~30 rows at every sf), zero-filled by left
-    joins on the spine so silent gaps can't shrink the overlap; the
-    rank comes from the house broadcast non-equi self-join over the
-    POST-AGGREGATION spine, and each lag is a rank equi-join against
-    the broadcast 15-row lag grid.
-    """
-    from ..functions.exact import round_big_int_ratio
-
-    t = Tables(spark, sf_dir)
-    ev = t.events.select(
-        F.to_date("ts").alias("d"), "event_type"
-    )
-    days = ev.select("d").distinct()
-    cx = (
-        ev.filter(F.col("event_type") == CCF_TYPE_X)
-        .groupBy("d")
-        .agg(F.count(F.lit(1)).alias("cx"))
-    )
-    cy = (
-        ev.filter(F.col("event_type") == CCF_TYPE_Y)
-        .groupBy("d")
-        .agg(F.count(F.lit(1)).alias("cy"))
-    )
-    filled = (
-        days.join(cx, "d", "left")
-        .join(cy, "d", "left")
-        .select(
-            "d",
-            F.coalesce(F.col("cx"), F.lit(0)).alias("x"),
-            F.coalesce(F.col("cy"), F.lit(0)).alias("y"),
-        )
-    )
-    b0 = filled.select(F.col("d").alias("d_b"))
-    idx = (
-        filled.join(F.broadcast(b0), F.col("d_b") <= F.col("d"))
-        .groupBy("d", "x", "y")
-        .agg(F.count(F.lit(1)).alias("k"))
-    )
-    tot = idx.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("x").alias("sx"),
-        F.sum("y").alias("sy"),
-    )
-    cent = idx.crossJoin(F.broadcast(tot)).select(
-        "k",
-        (F.col("n") * F.col("x") - F.col("sx")).alias("zx"),
-        (F.col("n") * F.col("y") - F.col("sy")).alias("zy"),
-    )
-    den = cent.agg(
-        F.sum(dec38(F.col("zx")) * dec38(F.col("zx"))).alias("zxx"),
-        F.sum(dec38(F.col("zy")) * dec38(F.col("zy"))).alias("zyy"),
-    )
-    lags = F.explode(
-        F.array(
-            *[F.lit(l).cast("long") for l in range(-CCF_MAX_LAG, CCF_MAX_LAG + 1)]
-        )
-    ).alias("l")
-    a = cent.select(F.col("k").alias("k_a"), F.col("zx").alias("zx_a")).select(
-        "k_a", "zx_a", lags
-    )
-    b = cent.select(F.col("k").alias("k_b"), F.col("zy").alias("zy_b"))
-    num = (
-        a.join(b, F.col("k_b") == F.col("k_a") + F.col("l"))
-        .groupBy(F.col("l").alias("lag"))
-        .agg(
-            F.count(F.lit(1)).alias("n_pairs"),
-            F.sum(dec38(F.col("zx_a")) * dec38(F.col("zy_b"))).alias("num"),
-        )
-    )
-    sign = F.when(F.col("num") < 0, F.lit(-1)).otherwise(F.lit(1)).cast(
-        "decimal(38,0)"
-    )
-    return num.crossJoin(F.broadcast(den)).select(
-        "lag",
-        "n_pairs",
-        F.when(
-            (F.col("zxx") > 0) & (F.col("zyy") > 0),
-            round_big_int_ratio(
-                sign * F.col("num") * F.col("num"),
-                F.col("zxx") * F.col("zyy"),
-            ),
-        ).alias("ccf_sq"),
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -835,111 +677,6 @@ def corpus_truncation_loss_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# 10. Exponential-decay user value at a halflife ladder
-# ---------------------------------------------------------------------------
-
-DECAY_HALflIVES = (7, 14, 30)
-DECAY_KCAP = 40
-
-
-def _decay_oracle() -> str:
-    from ..functions.exact import sql_round_big_int_ratio
-
-    hl = ", ".join(str(h) for h in DECAY_HALflIVES)
-    kc = DECAY_KCAP
-    return f"""
-    WITH ev AS (
-      SELECT event_type, CAST(ts AS DATE) AS d,
-             CAST(floor(value * 100 + 0.5) AS BIGINT) AS v
-      FROM events WHERE value IS NOT NULL
-    ), ref AS (SELECT max(d) AS ref_d FROM ev),
-    hs AS (SELECT CAST(unnest([{hl}]) AS BIGINT) AS h),
-    wts AS (
-      SELECT e.event_type, h.h, e.v,
-             (1::HUGEINT << ({kc} - least(datediff('day', e.d, r.ref_d) // h.h,
-                                          {kc}))) AS w
-      FROM ev e, ref r, hs h
-    )
-    SELECT event_type, h AS halflife_days,
-           CAST(count(*) AS BIGINT) AS n_events,
-           CAST(sum(v) AS BIGINT) AS raw_cents,
-           {sql_round_big_int_ratio(
-               'CAST(sum(w * v) AS HUGEINT)', f'1::HUGEINT << {kc}')}
-             AS decayed_cents,
-           {sql_round_big_int_ratio(
-               'CAST(sum(w * v) AS HUGEINT)',
-               f'(1::HUGEINT << {kc}) * sum(v)')} AS retention_ratio
-    FROM wts GROUP BY event_type, h
-    """
-
-
-@register("events_decayed_value_halflife", oracle=_decay_oracle())
-def events_decayed_value_halflife(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exponentially-decayed event value at a halflife ladder
-    (7/14/30 days): weight = 2^(−⌊Δ/H⌋) with Δ = days before the
-    corpus reference date (max event date) — the step-decay form
-    whose weights are EXACT dyadic rationals, so the whole ladder is
-    integer arithmetic: numerator Σ v·2^(K−k) with K = 40 and k
-    capped at K (weights below 2^−40 clamp to the floor, identically
-    on both engines), one shift per row, two round_big_int_ratio
-    outputs (decayed cents and the retention ratio decayed/raw).
-    Continuous e^(−λΔ) decay would be transcendental per row — the
-    dyadic staircase keeps the engine-boundary contract while
-    preserving the halflife semantics product analytics wants
-    (recency-weighted LTV per event type; the decay twin of
-    events_ewma_value, which smooths rather than ages).
-
-    One partial-aggregated pass over events per (type, halflife); the
-    3-element ladder and the 1-row reference date ride broadcasts.
-    Σv·2^K ≤ 10¹⁷·2⁴⁰ ≈ 10²⁹ at sf1×10 — inside decimal(38)/HUGEINT.
-    """
-    from ..functions.exact import round_big_int_ratio
-
-    kc = DECAY_KCAP
-    t = Tables(spark, sf_dir)
-    ev = t.events.filter(F.col("value").isNotNull()).select(
-        "event_type",
-        F.to_date("ts").alias("d"),
-        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("v"),
-    )
-    ref = ev.agg(F.max("d").alias("ref_d"))
-    hs = F.explode(
-        F.array(*[F.lit(h).cast("long") for h in DECAY_HALflIVES])
-    ).alias("h")
-    k = F.least(
-        F.floor(F.datediff(F.col("ref_d"), F.col("d")) / F.col("h")).cast("long"),
-        F.lit(kc),
-    )
-    wts = (
-        ev.crossJoin(F.broadcast(ref))
-        .select("event_type", "v", "d", "ref_d", hs)
-        .select("event_type", "h", "v", k.alias("k"))
-        # pyspark's F.shiftleft only takes a literal shift amount; the
-        # SQL form accepts a column expression
-        .select(
-            "event_type",
-            "h",
-            "v",
-            F.expr(f"shiftleft(cast(1 as bigint), cast({kc} - k as int))").alias(
-                "w"
-            ),
-        )
-    )
-    den_dec = F.lit(2 ** kc).cast("decimal(38,0)")
-    return wts.groupBy("event_type", F.col("h").alias("halflife_days")).agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.sum("v").alias("raw_cents"),
-        round_big_int_ratio(
-            F.sum(dec38(F.col("w")) * dec38(F.col("v"))), den_dec
-        ).alias("decayed_cents"),
-        round_big_int_ratio(
-            F.sum(dec38(F.col("w")) * dec38(F.col("v"))),
-            den_dec * dec38(F.sum("v")),
-        ).alias("retention_ratio"),
-    )
-
-
-# ---------------------------------------------------------------------------
 # 11. Quasi-identifier entropy / re-identification risk audit
 # ---------------------------------------------------------------------------
 
@@ -1386,178 +1123,4 @@ def corpus_dup_cap_retention_curve(spark: SparkSession, sf_dir: str) -> DataFram
             F.sum(F.col("kept") * F.col("tok_one")),
             F.sum(F.col("c") * F.col("tok_one")),
         ).alias("token_retention"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# 18. Audience-overlap Jaccard between event-type pairs
-# ---------------------------------------------------------------------------
-
-
-def _audience_oracle() -> str:
-    from ..functions.exact import sql_round_int_ratio
-
-    return f"""
-    WITH ut AS (
-      SELECT DISTINCT user_id, event_type FROM events
-    ), sizes AS (
-      SELECT event_type, CAST(count(*) AS BIGINT) AS n FROM ut GROUP BY 1
-    ), inter AS (
-      SELECT a.event_type AS type_a, b.event_type AS type_b,
-             CAST(count(*) AS BIGINT) AS n_inter
-      FROM ut a JOIN ut b
-        ON b.user_id = a.user_id AND b.event_type > a.event_type
-      GROUP BY 1, 2
-    )
-    SELECT i.type_a, i.type_b, sa.n AS users_a, sb.n AS users_b,
-           i.n_inter, sa.n + sb.n - i.n_inter AS n_union,
-           {sql_round_int_ratio('i.n_inter', 'sa.n + sb.n - i.n_inter')}
-             AS jaccard
-    FROM inter i
-    JOIN sizes sa ON sa.event_type = i.type_a
-    JOIN sizes sb ON sb.event_type = i.type_b
-    """
-
-
-@register("events_type_audience_jaccard", oracle=_audience_oracle())
-def events_type_audience_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Audience-overlap Jaccard between every pair of event types:
-    |users doing both| / |users doing either| — the product-analytics
-    segmentation primitive ("are purchasers a subset of clickers, or
-    a different crowd?") that the funnel/attribution queries assume
-    but never measure. Pairs with zero shared users drop out (no row),
-    identically on both engines.
-
-    Scale shape: the fact scan first collapses to DISTINCT (user,
-    type) — a hash aggregate bounded by users × 5 — then the
-    intersection is a user-keyed equi self-join whose per-user fan-out
-    is ≤ C(5,2) = 10 rows BY MECHANISM (type-pair grid, never
-    user-pair); sizes join back on the ≤ 5-row type table. Jaccard is
-    one exact round_int_ratio.
-    """
-    from ..functions.exact import round_int_ratio
-
-    t = Tables(spark, sf_dir)
-    ut = t.events.select("user_id", "event_type").distinct()
-    sizes = ut.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
-    a = ut.select("user_id", F.col("event_type").alias("type_a"))
-    b = ut.select(F.col("user_id").alias("uid_b"), F.col("event_type").alias("type_b"))
-    inter = (
-        a.join(
-            b,
-            (F.col("uid_b") == F.col("user_id"))
-            & (F.col("type_b") > F.col("type_a")),
-        )
-        .groupBy("type_a", "type_b")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    sa = sizes.select(F.col("event_type").alias("type_a"), F.col("n").alias("users_a"))
-    sb = sizes.select(F.col("event_type").alias("type_b"), F.col("n").alias("users_b"))
-    j = inter.join(F.broadcast(sa), "type_a").join(F.broadcast(sb), "type_b")
-    uni = F.col("users_a") + F.col("users_b") - F.col("n_inter")
-    return j.select(
-        "type_a",
-        "type_b",
-        "users_a",
-        "users_b",
-        "n_inter",
-        uni.alias("n_union"),
-        round_int_ratio(F.col("n_inter"), uni).alias("jaccard"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# 19. Entropy rate of the user-path Markov chain
-# ---------------------------------------------------------------------------
-
-
-def _markov_entropy_oracle() -> str:
-    from ..functions.detmath import sql_det_ln_steps
-
-    return f"""
-    WITH seq AS (
-      SELECT user_id, event_type,
-             lag(event_type) OVER (PARTITION BY user_id
-                                   ORDER BY ts, event_id) AS prev_type
-      FROM events
-    ), trans AS (
-      SELECT prev_type AS from_type, event_type AS to_type,
-             CAST(count(*) AS BIGINT) AS c
-      FROM seq WHERE prev_type IS NOT NULL
-      GROUP BY 1, 2
-    ), rowsum AS (
-      SELECT from_type, CAST(sum(c) AS BIGINT) AS cf FROM trans GROUP BY 1
-    ), cells AS (
-      SELECT t.from_type, t.to_type, t.c, r.cf
-      FROM trans t JOIN rowsum r USING (from_type)
-    ), {sql_det_ln_steps('cells', 'c', 'lc')},
-    withcf AS (SELECT *, cf AS arg_cf FROM lc_rel),
-    {sql_det_ln_steps('withcf', 'arg_cf', 'lcf')},
-    agg AS (
-      SELECT CAST(sum(c) AS BIGINT) AS n_transitions,
-             CAST(count(DISTINCT from_type) AS BIGINT) AS n_states,
-             CAST(count(*) AS BIGINT) AS n_edges,
-             CAST(sum(c * (lcf - lc)) AS BIGINT) AS hsum
-      FROM lcf_rel
-    ), witha AS (SELECT *, n_states AS arg_m FROM agg),
-    {sql_det_ln_steps('witha', 'arg_m', 'lnm')}
-    SELECT n_transitions, n_states, n_edges,
-           {sql_halfup_div('hsum', 'n_transitions')} / 1000000.0
-             AS entropy_rate_nats,
-           lnm / 1000000.0 AS ln_states
-    FROM lnm_rel
-    """
-
-
-@register("events_markov_entropy_rate", oracle=_markov_entropy_oracle())
-def events_markov_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Empirical entropy rate of the user-path Markov chain:
-    H = −Σ_ij p̂(i,j)·ln p̂(j|i) = Σ_ij (c_ij/C)·(ln c_i• − ln c_ij)
-    over the consecutive-event transition counts — the
-    predictability summary of the whole path model the family
-    already materializes (events_user_path_transitions is the kernel,
-    events_markov_stationary its long-run mix; the entropy rate says
-    in one number how deterministic user behavior is, with ln(#states)
-    as the ceiling).
-
-    Pairing is the house (ts, event_id)-ordered lag window per user —
-    one user-keyed exchange, then everything lives on the ≤ 5×5
-    transition grid: every ln is det_ln_q on an exact integer count
-    (< 2⁵³ at any scale), the H sum an int64 accumulation, the rate
-    one shared half-up division quantized at micro-nats.
-    """
-    from ..functions.detmath import det_ln_q
-
-    t = Tables(spark, sf_dir)
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    seq = t.events.select(
-        "user_id", "event_type", F.lag("event_type").over(w).alias("prev_type")
-    )
-    trans = (
-        seq.where(F.col("prev_type").isNotNull())
-        .groupBy(
-            F.col("prev_type").alias("from_type"),
-            F.col("event_type").alias("to_type"),
-        )
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    rowsum = trans.groupBy("from_type").agg(F.sum("c").alias("cf"))
-    cells = trans.join(F.broadcast(rowsum), "from_type")
-    agg = cells.agg(
-        F.sum("c").alias("n_transitions"),
-        F.countDistinct("from_type").alias("n_states"),
-        F.count(F.lit(1)).alias("n_edges"),
-        F.sum(
-            F.col("c") * (det_ln_q(F.col("cf")) - det_ln_q(F.col("c")))
-        ).alias("hsum"),
-    )
-    return agg.select(
-        "n_transitions",
-        "n_states",
-        "n_edges",
-        (
-            halfup_div(F.col("hsum"), F.col("n_transitions")).cast("long")
-            / F.lit(1e6)
-        ).alias("entropy_rate_nats"),
-        (det_ln_q(F.col("n_states")) / F.lit(1e6)).alias("ln_states"),
     )

@@ -15,6 +15,9 @@ with the other daily-series queries.
 
 ``stats_kendall_w_nation_priority`` lives in ``operators/stats_rank.py``
 with the other stats queries.
+
+``events_session_duration_histogram`` lives in
+``operators/events_sequence.py`` with the other events queries.
 """
 
 from __future__ import annotations
@@ -25,101 +28,6 @@ from pyspark.sql.window import Window
 
 from ..registry import register
 from ..tables import Tables
-
-
-# ---------------------------------------------------------------------------
-# 2. Session duration distribution (fixed minute buckets)
-# ---------------------------------------------------------------------------
-
-SESSDUR_EDGES = (1, 5, 15, 30, 60)  # minutes; bucket 0 = [0,1), last = 60+
-
-
-def _sessdur_bucket_sql(col: str) -> str:
-    cases = []
-    lo = 0
-    for i, hi in enumerate(SESSDUR_EDGES):
-        cases.append(f"WHEN {col} < {hi} THEN {i}")
-        lo = hi
-    return "CASE " + " ".join(cases) + f" ELSE {len(SESSDUR_EDGES)} END"
-
-
-def _sessdur_oracle() -> str:
-    from ..streaming.batch_equivalents import SESSION_GAP_MIN
-    from ..functions.exact import sql_round_int_ratio
-
-    return f"""
-    WITH flagged AS (
-      SELECT user_id, ts, event_id,
-             CASE WHEN lag(ts) OVER w IS NULL
-                    OR epoch_us(ts) - epoch_us(lag(ts) OVER w)
-                       > {SESSION_GAP_MIN} * 60000000
-                  THEN 1 ELSE 0 END AS is_new
-      FROM events
-      WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-    ), sessions AS (
-      SELECT user_id,
-             sum(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_id,
-             ts
-      FROM flagged
-    ), per AS (
-      SELECT (epoch_us(max(ts)) - epoch_us(min(ts))) // 60000000 AS dur_min
-      FROM sessions GROUP BY user_id, session_id
-    ), bucketed AS (
-      SELECT CAST({_sessdur_bucket_sql('dur_min')} AS BIGINT) AS bucket,
-             CAST(count(*) AS BIGINT) AS n_sessions
-      FROM per GROUP BY 1
-    ), tot AS (SELECT CAST(sum(n_sessions) AS BIGINT) AS t FROM bucketed)
-    SELECT b.bucket, b.n_sessions,
-           {sql_round_int_ratio('b.n_sessions', 't.t')} AS share
-    FROM bucketed b, tot t ORDER BY b.bucket
-    """
-
-
-@register("events_session_duration_histogram", oracle=_sessdur_oracle())
-def events_session_duration_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session duration distribution over fixed minute buckets
-    ([0,1), [1,5), [5,15), [15,30), [30,60), 60+): the engagement
-    SHAPE metric the sessionization family was missing —
-    ``events_sessionization`` enumerates sessions, DAU/MAU counts
-    them; product teams read duration MIX (bounce share vs long-tail
-    share) off exactly this histogram.
-
-    Same one-shuffle lag/cumsum sessionization kernel; durations are
-    exact integer minute floors of microsecond spans, buckets are a
-    literal CASE ladder (no percentile pass), shares exact half-up
-    ratios. Output is <= 6 rows regardless of scale.
-    """
-    from ..streaming.batch_equivalents import SESSION_GAP_MIN
-    from ..functions.exact import round_int_ratio
-
-    t = Tables(spark, sf_dir)
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gap = F.unix_micros(F.col("ts")) - F.unix_micros(F.lag(F.col("ts")).over(w))
-    flagged = t.events.select("user_id", "ts", "event_id").withColumn(
-        "is_new",
-        F.when(gap.isNull() | (gap > SESSION_GAP_MIN * 60_000_000), 1).otherwise(0),
-    )
-    cum = w.rowsBetween(Window.unboundedPreceding, 0)
-    sessions = flagged.withColumn("session_id", F.sum("is_new").over(cum))
-    per = sessions.groupBy("user_id", "session_id").agg(
-        F.expr("(unix_micros(max(ts)) - unix_micros(min(ts))) div 60000000").alias(
-            "dur_min"
-        )
-    )
-    bucket = F.when(F.col("dur_min") < SESSDUR_EDGES[0], 0)
-    for i, hi in enumerate(SESSDUR_EDGES[1:], start=1):
-        bucket = bucket.when(F.col("dur_min") < hi, i)
-    bucket = bucket.otherwise(len(SESSDUR_EDGES)).cast("long")
-    bucketed = per.select(bucket.alias("bucket")).groupBy("bucket").agg(
-        F.count(F.lit(1)).alias("n_sessions")
-    )
-    tot = bucketed.agg(F.sum("n_sessions").alias("t"))
-    return bucketed.crossJoin(F.broadcast(tot)).select(
-        "bucket",
-        "n_sessions",
-        round_int_ratio(F.col("n_sessions"), F.col("t")).alias("share"),
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -12,6 +12,9 @@ for the classifier score, and a bottom-k sketch mergeability audit.
 
 ``events_spectral_entropy_periods`` lives in
 ``operators/daily_spectral.py`` with the other daily-series queries.
+
+``events_fano_factor_curve`` lives in ``operators/events_series.py``
+with the other events queries.
 """
 
 from __future__ import annotations
@@ -22,100 +25,6 @@ from pyspark.sql import functions as F
 from ..functions.exact import dec38, halfup_div, sql_halfup_div
 from ..registry import register
 from ..tables import Tables
-
-
-# ---------------------------------------------------------------------------
-# 2. Fano-factor burstiness curve across window widths
-# ---------------------------------------------------------------------------
-
-FANO_WINDOWS_H = (1, 6, 24, 168)
-
-
-def _fano_oracle() -> str:
-    hd = sql_halfup_div
-    per_w = []
-    for w in FANO_WINDOWS_H:
-        per_w.append(
-            f"""
-      SELECT {w}::BIGINT AS window_h, bucket, CAST(count(*) AS HUGEINT) AS c
-      FROM (SELECT epoch_us(ts) // {w * 3600 * 1000000} AS bucket FROM events)
-      GROUP BY bucket"""
-        )
-    unions = " UNION ALL ".join(per_w)
-    return f"""
-    WITH cells AS ({unions}),
-    s AS (
-      SELECT window_h, CAST(count(*) AS HUGEINT) AS m,
-             CAST(sum(c) AS HUGEINT) AS sc,
-             CAST(sum(c * c) AS HUGEINT) AS scc
-      FROM cells GROUP BY window_h
-    )
-    SELECT window_h, CAST(m AS BIGINT) AS n_buckets,
-           CAST(sc AS BIGINT) AS n_events,
-           CASE WHEN m > 1 AND sc > 0 THEN
-             CAST({hd('1000000::HUGEINT * (m * scc - sc * sc)',
-                      '(m - 1) * sc')} AS BIGINT)
-           END AS fano_micro
-    FROM s ORDER BY window_h
-    """
-
-
-@register("events_fano_factor_curve", _fano_oracle())
-def events_fano_factor_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fano factor (variance-to-mean of bucket counts) of the event
-    stream across window widths 1h/6h/24h/168h — the SCALE-CURVE form
-    of burstiness: a Poisson process holds F = 1 at every width, while
-    clustered arrivals push F up with widening windows, and the slope
-    of the curve is the standard long-range-dependence fingerprint
-    (complements ``events_interarrival_burstiness``, one number at the
-    gap level, and ``stats_overdispersion_vmr``, one width).
-
-    Exactness: occupied-bucket counts only (structural-zero policy
-    shared with the burstiness op, documented there); F = (m sum c^2 -
-    (sum c)^2) * m / (m^2 (m-1) sum c) is one half-up micro ratio of
-    exact integers per width — sample variance over mean with the
-    common denominators multiplied through.
-
-    Scale shape: one scan per width fans out from a static 4-way
-    union of row-local bucket projections, each partial-aggregating
-    to its bucket table; nothing downstream exceeds bucket counts.
-    """
-    t = Tables(spark, sf_dir)
-    cells = None
-    for w in FANO_WINDOWS_H:
-        part = (
-            t.events.select(
-                F.expr(f"unix_micros(ts) div {w * 3600 * 1000000}").alias("bucket")
-            )
-            .groupBy("bucket")
-            .agg(F.count(F.lit(1)).alias("c"))
-            .select(F.lit(w).cast("long").alias("window_h"), "bucket", "c")
-        )
-        cells = part if cells is None else cells.unionAll(part)
-    s = cells.groupBy("window_h").agg(
-        dec38(F.count(F.lit(1))).alias("m"),
-        dec38(F.sum("c")).alias("sc"),
-        F.sum(dec38(F.col("c")) * F.col("c")).alias("scc"),
-    )
-    m6 = F.lit(1_000_000).cast("decimal(38,0)")
-    return s.select(
-        "window_h",
-        F.col("m").cast("long").alias("n_buckets"),
-        F.col("sc").cast("long").alias("n_events"),
-        F.when(
-            (F.col("m") > 1) & (F.col("sc") > 0),
-            # F = var/mean = (m scc - sc^2) / ((m-1) sc): an earlier
-            # draft carried an extra m on both sides (F/m, parity green
-            # — the twin-sided class); the replica's float var/mean
-            # anchor caught it, the FOURTH such catch this round
-            halfup_div(
-                m6 * (F.col("m") * F.col("scc") - F.col("sc") * F.col("sc")),
-                (F.col("m") - 1) * F.col("sc"),
-            ),
-        )
-        .cast("long")
-        .alias("fano_micro"),
-    ).orderBy("window_h")
 
 
 # ---------------------------------------------------------------------------

@@ -21,6 +21,9 @@ Reference parity note: the reference (Go ingestion pipeline,
 
 ``stats_cochran_armitage_trend`` lives in ``operators/stats_tables.py``
 with the other stats queries.
+
+``events_session_gap_sensitivity`` lives in
+``operators/events_sequence.py`` with the other events queries.
 """
 
 from __future__ import annotations
@@ -258,120 +261,3 @@ def layout_minmax_skipping_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("skip_efficiency_micro"),
     ).orderBy("thr_cents")
-
-
-# ---------------------------------------------------------------------------
-# 5. Session-count sensitivity curve across gap thresholds
-# ---------------------------------------------------------------------------
-
-SESSION_GAPS_S = (300, 900, 1800, 3600, 7200)
-
-
-def _gap_sensitivity_oracle() -> str:
-    hd = sql_halfup_div
-    per_thr = " UNION ALL ".join(
-        f"""
-    SELECT {thr}::BIGINT AS gap_s,
-           (SELECT n_users FROM tot) AS n_users,
-           (SELECT n_events FROM tot) AS n_events,
-           (SELECT n_users FROM tot)
-             + (SELECT CAST(coalesce(sum(CASE WHEN g > {thr}::BIGINT * 1000000
-                                         THEN 1 ELSE 0 END), 0) AS BIGINT)
-                FROM gaps WHERE g IS NOT NULL) AS n_sessions"""
-        for thr in SESSION_GAPS_S
-    )
-    return f"""
-    WITH gaps AS (
-      SELECT epoch_us(ts) - lag(epoch_us(ts)) OVER w AS g
-      FROM events
-      WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-    ), tot AS (
-      SELECT CAST(count(DISTINCT user_id) AS BIGINT) AS n_users,
-             CAST(count(*) AS BIGINT) AS n_events
-      FROM events
-    ), levels AS ({per_thr})
-    SELECT gap_s, n_users, n_events, n_sessions,
-           CAST({hd('1000000::HUGEINT * n_sessions', 'n_users')} AS BIGINT)
-             AS sessions_per_user_micro,
-           CAST({hd('1000000::HUGEINT * n_events', 'n_sessions')} AS BIGINT)
-             AS events_per_session_micro
-    FROM levels ORDER BY gap_s
-    """
-
-
-@register("events_session_gap_sensitivity", _gap_sensitivity_oracle())
-def events_session_gap_sensitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-count sensitivity curve: for each candidate inactivity
-    timeout (5m/15m/30m/1h/2h), the total session count (= users +
-    gaps exceeding the timeout), sessions per user, and events per
-    session. THE capacity-planning input for every session-keyed
-    stage: ``events_sessionization`` materializes sessions at ONE
-    fixed gap — this prices the whole policy ladder in one pass, the
-    same policy-pricing-curve shape as ``dedup_lsh_band_tuning_curve``
-    and ``corpus_truncation_loss_curve`` (pick the knee, then run the
-    expensive materialization once). A flat curve says the timeout
-    barely matters (bursty usage with long silences); a steep one says
-    session state size is dominated by the policy choice.
-
-    Exactness: session counts are exact integers (sessions = users +
-    #(gap > T), the per-user telescoping identity); the two ratios are
-    single half-up 1e-6 divisions per threshold.
-
-    Scale shape: one user-partitioned lag (hash-parallel, never a
-    global window) feeding ONE aggregate that evaluates all five
-    thresholds as conditional sums (literals — no per-threshold scan);
-    the 5-row curve is scalar algebra after.
-    """
-    from pyspark.sql.window import Window
-
-    t = Tables(spark, sf_dir)
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gaps = t.events.select(
-        (F.unix_micros(F.col("ts")) - F.unix_micros(F.lag(F.col("ts")).over(w))).alias("g")
-    )
-    over = gaps.agg(
-        *[
-            F.sum(F.when(F.col("g") > thr * 1_000_000, 1).otherwise(0))
-            .cast("long")
-            .alias(f"o_{i}")
-            for i, thr in enumerate(SESSION_GAPS_S)
-        ]
-    )
-    tot = t.events.agg(
-        F.countDistinct("user_id").cast("long").alias("n_users"),
-        F.count(F.lit(1)).cast("long").alias("n_events"),
-    )
-    levels = (
-        tot.crossJoin(F.broadcast(over))
-        .select(
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(thr).cast("long").alias("gap_s"),
-                            F.col("n_users").alias("n_users"),
-                            F.col("n_events").alias("n_events"),
-                            (F.col("n_users") + F.coalesce(F.col(f"o_{i}"), F.lit(0)))
-                            .cast("long")
-                            .alias("n_sessions"),
-                        )
-                        for i, thr in enumerate(SESSION_GAPS_S)
-                    ]
-                )
-            ).alias("s")
-        )
-        .select("s.*")
-    )
-    m6 = F.lit(1_000_000).cast("decimal(38,0)")
-    return levels.select(
-        "gap_s",
-        "n_users",
-        "n_events",
-        "n_sessions",
-        halfup_div(m6 * dec38(F.col("n_sessions")), dec38(F.col("n_users")))
-        .cast("long")
-        .alias("sessions_per_user_micro"),
-        halfup_div(m6 * dec38(F.col("n_events")), dec38(F.col("n_sessions")))
-        .cast("long")
-        .alias("events_per_session_micro"),
-    ).orderBy("gap_s")

@@ -2364,7 +2364,6 @@ def stats_hoover_index_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _bhatt_oracle() -> str:
-    hd = sql_halfup_div
     return """
     WITH li AS (
       SELECT CAST(floor(l.l_discount * 100.0 + 0.5) AS BIGINT) AS disc,

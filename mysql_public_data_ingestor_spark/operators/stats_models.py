@@ -1744,7 +1744,6 @@ def stats_median_polish_2way(spark: SparkSession, sf_dir: str) -> DataFrame:
         "priority",
         F.coalesce(F.col("cell"), F.lit(0)).cast("long").alias("cell"),
     )
-    mid = lambda arr, n: F.element_at(F.array_sort(arr), (n + 1) // 2)  # noqa: E731
     rowmed = cells.groupBy("nationkey").agg(
         F.element_at(
             F.array_sort(F.collect_list("cell")),

@@ -26,6 +26,7 @@ from pyspark.sql.window import Window
 from ..functions.exact import dec38, halfup_div, order_cents, sql_halfup_div
 from ..registry import register
 from ..tables import Tables
+from .events import type_pair_days
 from .stats_samples import (
     block_ranks,
     flag_quantities,
@@ -2103,26 +2104,7 @@ def stats_sign_test_daily_pair(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.exact import round_big_int_ratio
 
     t = Tables(spark, sf_dir)
-    ev = t.events.select(F.to_date("ts").alias("d"), "event_type")
-    days = ev.select("d").distinct()
-    cx = (
-        ev.filter(F.col("event_type") == "view")
-        .groupBy("d")
-        .agg(F.count(F.lit(1)).alias("cx"))
-    )
-    cy = (
-        ev.filter(F.col("event_type") == "purchase")
-        .groupBy("d")
-        .agg(F.count(F.lit(1)).alias("cy"))
-    )
-    paired = (
-        days.join(cx, "d", "left")
-        .join(cy, "d", "left")
-        .select(
-            F.coalesce(F.col("cx"), F.lit(0)).alias("x"),
-            F.coalesce(F.col("cy"), F.lit(0)).alias("y"),
-        )
-    )
+    paired = type_pair_days(t, "view", "purchase")
     agg = paired.agg(
         F.sum(F.when(F.col("x") != F.col("y"), 1).otherwise(0)).alias("m"),
         F.sum(F.when(F.col("x") > F.col("y"), 1).otherwise(0)).alias("b_plus"),
@@ -3858,7 +3840,6 @@ def stats_brunner_munzel_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _fmax_oracle() -> str:
-    hd = sql_halfup_div
     return """
     WITH q AS (
       SELECT l_returnflag AS g, CAST(l_quantity AS HUGEINT) AS v
@@ -4129,7 +4110,6 @@ def stats_kuiper_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _lepage_oracle() -> str:
-    hd = sql_halfup_div
     return f"""
     WITH gv AS (
       SELECT CAST(l_quantity AS BIGINT) AS v,

@@ -1832,7 +1832,6 @@ def stats_bland_altman_price_agreement(spark: SparkSession, sf_dir: str) -> Data
     )
 
 
-
 # ---------------------------------------------------------------------------
 # Gwet's AC1 over the three quality gates
 # ---------------------------------------------------------------------------
@@ -2236,7 +2235,6 @@ def stats_phi_yule_q_gates(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("nx") < F.col("n"))
         & (F.col("ny") < F.col("n"))
     )
-    m6 = F.lit(2_000_000).cast("decimal(38,0)")  # via halfup_div(1e6*num, den)
     return pairs.select(
         "pair",
         n11.cast("long").alias("n11"),

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 from ..functions.exact import exact_sum, round_int_ratio
 from ..registry import register
 from ..tables import Tables
+from .events import type_transitions, user_order
 
 
 @register(
@@ -456,11 +457,7 @@ def events_attribution_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame
     microseconds (exact); timestamps never pass through FP.
     """
     t = Tables(spark, sf_dir)
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
+    w = user_order().rowsBetween(Window.unboundedPreceding, -1)
     is_touch = F.col("event_type").isin("view", "click")
     touched = t.events.select(
         "event_id",
@@ -632,15 +629,7 @@ def events_user_path_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines or runs; probabilities are a single integer division.
     """
     t = Tables(spark, sf_dir)
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    seq = t.events.select(
-        "user_id", "event_type", F.lag("event_type").over(w).alias("prev_type")
-    )
-    trans = (
-        seq.where(F.col("prev_type").isNotNull())
-        .groupBy(F.col("prev_type").alias("from_type"), F.col("event_type").alias("to_type"))
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
+    trans = type_transitions(t)
     totals = trans.groupBy("from_type").agg(F.sum("n").alias("n_from"))
     return trans.join(totals, "from_type").select(
         "from_type",
@@ -695,7 +684,7 @@ def events_ewma_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     from operator import add
 
     t = Tables(spark, sf_dir)
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    w = user_order()
     lags = [
         F.col("value") if j == 0 else F.lag("value", j).over(w) for j in range(EWMA_TERMS)
     ]
@@ -752,11 +741,7 @@ def events_attribution_position_based(spark: SparkSession, sf_dir: str) -> DataF
     never builds a touches x purchases join.
     """
     t = Tables(spark, sf_dir)
-    w_fwd = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(1, Window.unboundedFollowing)
-    )
+    w_fwd = user_order().rowsBetween(1, Window.unboundedFollowing)
     assigned = t.events.select(
         "event_id",
         "user_id",

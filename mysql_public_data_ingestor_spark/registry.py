@@ -81,6 +81,9 @@ def _ensure_loaded() -> None:
         daily_hypothesis,
         daily_spectral,
         dedup,
+        events_sequence,
+        events_series,
+        events_users,
         graph_centrality,
         graph_community,
         graph_linkpred,
@@ -104,7 +107,6 @@ def _ensure_loaded() -> None:
         roundfourteen2,
         roundfourteen3,
         roundfourteen4,
-        roundfourteen6,
         roundfourteen7,
         roundfourteen8,
         roundfourteen9,
@@ -122,7 +124,6 @@ def _ensure_loaded() -> None:
         roundthirteen6,
         roundthirteen7,
         roundthirteen8,
-        roundthirteen9,
         roundtwelve,
         roundtwelve10,
         roundtwelve2,

@@ -13,10 +13,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.exact import exact_sum
+from ..operators.events import SESSION_GAP_MIN, user_sessions
 from ..registry import register
 from ..tables import Tables
-
-SESSION_GAP_MIN = 30
 
 
 @register(
@@ -111,18 +110,7 @@ def events_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
     lag + cumulative-sum session ids — the standard distributed
     sessionization plan (one shuffle on user_id)."""
     t = Tables(spark, sf_dir)
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    # microsecond-exact gap (a seconds-level cast would truncate and
-    # disagree with the oracle's interval comparison at boundaries)
-    gap = F.unix_micros(F.col("ts")) - F.unix_micros(F.lag(F.col("ts")).over(w))
-    flagged = t.events.withColumn(
-        "is_new",
-        F.when(gap.isNull() | (gap > SESSION_GAP_MIN * 60_000_000), 1).otherwise(0),
-    )
-    cum = Window.partitionBy("user_id").orderBy("ts", "event_id").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    sessions = flagged.withColumn("session_id", F.sum("is_new").over(cum))
+    sessions = user_sessions(t.events)
     return sessions.groupBy("user_id", "session_id").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.min("ts").alias("session_start"),

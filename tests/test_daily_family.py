@@ -14,6 +14,7 @@ from __future__ import annotations
 
 import ast
 import os
+import re
 
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
@@ -79,10 +80,11 @@ DAILY_QUERIES = (
     "stats_seasonal_sen_slope",
 )
 
-# The orders day grouping, and the rank's self band join against the
-# bare day column (a prefix-sum band join carries a value column too).
+# The orders day grouping, and the rank's broadcast self band join
+# against the bare calendar-day column, named ``day`` or ``d`` (a
+# prefix-sum band join carries a value column too).
 DAY_GROUPING = 'F.to_date("o_orderdate").alias("day")'
-RANK_JOIN = '.select(F.col("day").alias("day_b"))'
+RANK_SIDE = re.compile(r'\.select\(\s*F\.col\("(d|day)"\)\.alias\("\1_b"\)\s*\)')
 
 
 def _is_daily_module(module: str) -> bool:
@@ -120,11 +122,21 @@ def test_orders_day_series_is_derived_in_one_place():
     assert hits == [("daily.py", "day_series")], hits
 
 
+def _is_rank_join(seg: str) -> bool:
+    """A broadcast band self-join of a day table against its own bare
+    day column: ``b = daily.select(F.col("d").alias("d_b"))`` joined on
+    ``F.col("d_b") <= F.col("d")``."""
+    return any(
+        "F.broadcast(" in seg and f'F.col("{c}_b") <= F.col("{c}")' in seg
+        for c in RANK_SIDE.findall(seg)
+    )
+
+
 def test_calendar_rank_is_built_in_one_place():
     """The only calendar band-join rank in the operators is
     ``daily.calendar_rank``; a series over another calendar (the events
     days) calls it too."""
-    hits = [(f, fn) for f, fn, _ in _functions_with(RANK_JOIN)]
+    hits = [(f, fn) for f, fn, seg in _functions_with("_b") if _is_rank_join(seg)]
     assert hits == [("daily.py", "calendar_rank")], hits
 
 

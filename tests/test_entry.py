@@ -71,6 +71,24 @@ def test_bench_and_plan_dump_names_resolve():
     assert not missing_plans, missing_plans
 
 
+def test_mask_plan_hides_lambda_variable_counter():
+    """Two builds of one higher-order-function plan differ only in the
+    process-wide lambda-variable counter; their masked plans are equal,
+    and a column named like a lambda variable keeps its name."""
+    from tools.dump_plans import mask_plan
+
+    a = (
+        "Output [2]: [transform(a#1, lambdafunction((lambda x_1#4L + 1), lambda x_1#4L, "
+        "false)) AS b#2, aggregate(a#1, 0, lambdafunction((lambda x_2#5L + lambda y_3#6L), "
+        "lambda x_2#5L, lambda y_3#6L, false), lambdafunction(lambda id#7L, lambda id#7L, "
+        "false)) AS o_0#3L]"
+    )
+    b = a.replace("x_1#", "x_41#").replace("x_2#", "x_42#").replace("y_3#", "y_43#")
+    assert mask_plan(a) == mask_plan(b)
+    assert "o_0#N" in mask_plan(a)
+    assert mask_plan(a.replace("o_0#", "o_1#")) != mask_plan(a)
+
+
 def test_plan_manifest_names_match_registry():
     """The committed plan manifest (``make manifest``) covers exactly the
     registered queries: a query added, renamed or deleted without a

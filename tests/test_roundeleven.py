@@ -13,6 +13,8 @@ import pytest
 
 from mysql_public_data_ingestor_spark.operators import daily_spectral
 from mysql_public_data_ingestor_spark.operators import graph_paths
+from mysql_public_data_ingestor_spark.operators import events_sequence
+from mysql_public_data_ingestor_spark.operators import events_series
 from mysql_public_data_ingestor_spark.operators import roundeleven
 from mysql_public_data_ingestor_spark.registry import all_queries
 from mysql_public_data_ingestor_spark.tables import Tables
@@ -232,7 +234,7 @@ def test_bass_matches_python(spark, sf_dir):
 
     daily = Counter(ts.date() for ts in ev["ts"])
     ss = [daily[d] for d in sorted(daily)]
-    sh = roundeleven.BASS_SCALE_SHIFT
+    sh = events_series.BASS_SCALE_SHIFT
     rows = []
     nprev = 0
     for i, s in enumerate(ss):
@@ -720,7 +722,7 @@ def test_absorbing_markov_matches_python(spark, sf_dir):
         if u in prev:
             trans[(prev[u], r.event_type)] += 1
         prev[u] = r.event_type
-    ts = roundeleven.TRANSIENT_STATES
+    ts = events_sequence.TRANSIENT_STATES
     cf = {r: sum(c for (a, _b), c in trans.items() if a == r) for r in ts}
     C = [[trans.get((a, b), 0) for b in ts] for a in ts]
 
@@ -729,7 +731,7 @@ def test_absorbing_markov_matches_python(spark, sf_dir):
 
     def det(entry):
         tot = 0
-        for s, p in roundeleven._perm_terms():
+        for s, p in events_sequence._perm_terms():
             prod = 1
             for r in range(4):
                 prod *= entry(r, p[r])

@@ -13,6 +13,7 @@ import pytest
 
 from mysql_public_data_ingestor_spark.operators import graph_paths
 from mysql_public_data_ingestor_spark.operators import daily_spectral
+from mysql_public_data_ingestor_spark.operators import events_sequence
 from mysql_public_data_ingestor_spark.operators import roundeleven2 as r112
 from mysql_public_data_ingestor_spark.tables import Tables
 from tools.check_correctness import compare, duck_connection
@@ -253,7 +254,7 @@ def test_hill_matches_python(spark, sf_dir):
             if g > 0:
                 gaps.append(g)
     gaps.sort(reverse=True)
-    top = gaps[: r112.HILL_K + 1]
+    top = gaps[: events_sequence.HILL_K + 1]
     lns = [ref_det_ln_q(g) for g in top]
     lk1 = min(lns)
     sm = sum(ln - lk1 for ln in lns)

@@ -223,7 +223,7 @@ def test_whipple_matches_python(spark, sf_dir):
 
 
 def test_parkinson_matches_python(spark, sf_dir):
-    from mysql_public_data_ingestor_spark.functions.detmath import ref_det_ln_q
+    from mysql_public_data_ingestor_spark.functions.detmath import LN2_MICRO, ref_det_ln_q
 
     pdf = Tables(spark, sf_dir).events.select("ts").toPandas()
     cells = Counter((ts.date(), ts.hour) for ts in pdf["ts"])
@@ -236,7 +236,7 @@ def test_parkinson_matches_python(spark, sf_dir):
         terms.append(ref_det_ln_q(float(hi)) - ref_det_ln_q(float(lo)))
     n = len(terms)
     sd2 = sum(t * t for t in terms)
-    want = _halfup_int(sd2, 4 * r14.LN2_MICRO * n)
+    want = _halfup_int(sd2, 4 * LN2_MICRO * n)
     got = _q("events_parkinson_volatility_daily")(spark, sf_dir).toPandas().iloc[0]
     assert int(got["n_days"]) == n
     assert int(got["parkinson_var_micro"]) == want

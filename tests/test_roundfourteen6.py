@@ -183,7 +183,7 @@ def test_theil_u_matches_python(spark, sf_dir):
 
 def test_ami_matches_python(spark, sf_dir):
     from mysql_public_data_ingestor_spark.functions.detmath import ref_det_ln_fix
-    from mysql_public_data_ingestor_spark.operators.roundfourteen6 import (
+    from mysql_public_data_ingestor_spark.operators.events_series import (
         AMI_LAGS,
     )
 

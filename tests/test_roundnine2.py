@@ -17,6 +17,7 @@ import pandas as pd
 import pytest
 
 from mysql_public_data_ingestor_spark.operators import graph_paths
+from mysql_public_data_ingestor_spark.operators import events_sequence
 from mysql_public_data_ingestor_spark.operators import roundnine2 as r92
 from mysql_public_data_ingestor_spark.operators import stats_dist
 from mysql_public_data_ingestor_spark.functions.detmath import ref_det_ln_q
@@ -178,7 +179,7 @@ def test_sequential_patterns_matches_python(spark, sf_dir, events_pdf):
             if sids[i] == sids[i + 2]:
                 p = f"{g.loc[i, 'event_type']}>{g.loc[i+1, 'event_type']}>{g.loc[i+2, 'event_type']}"
                 counts[p] = counts.get(p, 0) + 1
-    top = sorted(counts.items(), key=lambda kv: (-kv[1], kv[0]))[: r92.SEQPAT_TOPK]
+    top = sorted(counts.items(), key=lambda kv: (-kv[1], kv[0]))[: events_sequence.SEQPAT_TOPK]
     assert [(r["pattern"], int(r["n"])) for _, r in got.iterrows()] == top
 
 

@@ -20,6 +20,7 @@ from mysql_public_data_ingestor_spark.operators import (
     graph_structure,
 )
 from mysql_public_data_ingestor_spark.operators import daily_change
+from mysql_public_data_ingestor_spark.operators import events_users
 from mysql_public_data_ingestor_spark.operators import roundnine
 from mysql_public_data_ingestor_spark.registry import all_queries
 from mysql_public_data_ingestor_spark.tables import Tables
@@ -596,7 +597,7 @@ def test_retention_decay_matches_python(spark, sf_dir):
     assert row["intercept_ln"] == _half_up_int(sy * den - num * sw, n * den) / 1e9
     if num < 0:
         assert row["half_life_weeks"] == _half_up(
-            roundnine.LN2_U9 * den, -num
+            events_users.LN2_U9 * den, -num
         )
     else:
         assert pd.isna(row["half_life_weeks"])

@@ -12,6 +12,8 @@ import pytest
 
 from mysql_public_data_ingestor_spark.operators import graph_paths
 from mysql_public_data_ingestor_spark.operators import daily_hypothesis
+from mysql_public_data_ingestor_spark.operators import events_sequence
+from mysql_public_data_ingestor_spark.operators import events_users
 from mysql_public_data_ingestor_spark.operators import roundten2
 from mysql_public_data_ingestor_spark.operators import stats_rank
 from mysql_public_data_ingestor_spark.operators import stats_tables
@@ -195,7 +197,7 @@ def test_cohort_retention_matches_python(spark, sf_dir):
     first = uw.groupby("user_id")["week"].min().rename("cohort")
     j = uw.merge(first, on="user_id")
     j["off"] = ((j["week"] - j["cohort"]).dt.days // 7).astype(int)
-    j = j[j["off"] <= roundten2.COHORT_MAX_OFFSET]
+    j = j[j["off"] <= events_users.COHORT_MAX_OFFSET]
     act = j.groupby([j["cohort"].dt.strftime("%Y-%m-%d"), "off"]).size()
     sizes = first.dt.strftime("%Y-%m-%d").value_counts()
     assert len(got) == len(act)
@@ -237,16 +239,16 @@ def test_pathsig_matches_python(spark, sf_dir):
     sigs: dict = {}
     for uid, grp in ev.groupby("user_id"):
         ets = list(grp["event_type"])
-        if len(ets) < roundten2.PATHSIG_LEN or any(
-            e is None for e in ets[: roundten2.PATHSIG_LEN]
+        if len(ets) < events_sequence.PATHSIG_LEN or any(
+            e is None for e in ets[: events_sequence.PATHSIG_LEN]
         ):
             continue
-        sig = ">".join(ets[: roundten2.PATHSIG_LEN])
+        sig = ">".join(ets[: events_sequence.PATHSIG_LEN])
         conv = int("purchase" in ets)
         n, c = sigs.get(sig, (0, 0))
         sigs[sig] = (n + 1, c + conv)
     top = sorted(sigs.items(), key=lambda kv: (-kv[1][0], kv[0]))[
-        : roundten2.PATHSIG_TOPK
+        : events_sequence.PATHSIG_TOPK
     ]
     assert len(got) == len(top)
     got_rows = list(got.itertuples())
@@ -728,9 +730,9 @@ def test_rfm_transition_matches_python(spark, sf_dir):
     per["n2"] = per["tot"] - per["n1"]
 
     def cls(n):
-        if n >= roundten2.RFM_HIGH_MIN:
+        if n >= events_users.RFM_HIGH_MIN:
             return "high"
-        if n >= roundten2.RFM_MID_MIN:
+        if n >= events_users.RFM_MID_MIN:
             return "mid"
         if n >= 1:
             return "low"
@@ -940,7 +942,7 @@ def test_asof_nearest_matches_python(spark, sf_dir):
     for r in ev.itertuples():
         if r.event_type == "view":
             views[r.user_id].append(int(r.us))
-    edges = roundten2.ASOF_NEAR_EDGES_MIN
+    edges = events_sequence.ASOF_NEAR_EDGES_MIN
     hist: Counter = Counter()
     for r in ev.itertuples():
         if r.event_type != "purchase" or r.user_id not in views:

@@ -11,6 +11,7 @@ import math
 import pytest
 
 from mysql_public_data_ingestor_spark.operators import daily_change, daily_spectral
+from mysql_public_data_ingestor_spark.operators import events_series
 from mysql_public_data_ingestor_spark.operators import roundten3
 from mysql_public_data_ingestor_spark.operators import stats_dist
 from mysql_public_data_ingestor_spark.tables import Tables
@@ -214,9 +215,9 @@ def test_ccf_matches_python(spark, sf_dir):
     cx: dict = defaultdict(int)
     cy: dict = defaultdict(int)
     for r in ev.itertuples():
-        if r.event_type == roundten3.CCF_TYPE_X:
+        if r.event_type == events_series.CCF_TYPE_X:
             cx[r.ts.date()] += 1
-        elif r.event_type == roundten3.CCF_TYPE_Y:
+        elif r.event_type == events_series.CCF_TYPE_Y:
             cy[r.ts.date()] += 1
     xs = [cx.get(d, 0) for d in days]
     ys = [cy.get(d, 0) for d in days]
@@ -226,7 +227,7 @@ def test_ccf_matches_python(spark, sf_dir):
     zy = [n * y - sy for y in ys]
     zxx = sum(z * z for z in zx)
     zyy = sum(z * z for z in zy)
-    assert len(got) == 2 * roundten3.CCF_MAX_LAG + 1
+    assert len(got) == 2 * events_series.CCF_MAX_LAG + 1
     for _, row in got.iterrows():
         l = int(row["lag"])
         pairs = [
@@ -592,13 +593,13 @@ def test_decayed_value_matches_python(spark, sf_dir):
     ev = ev[ev["value"].notna()]
     days = [ts.date() for ts in ev["ts"]]
     ref = max(days)
-    kc = roundten3.DECAY_KCAP
+    kc = events_series.DECAY_KCAP
     from collections import defaultdict
 
     acc: dict = defaultdict(lambda: [0, 0, 0])  # n, raw, num
     for (et, d, v) in zip(ev["event_type"], days, ev["value"]):
         cents = int(math.floor(v * 100 + 0.5))
-        for h in roundten3.DECAY_HALflIVES:
+        for h in events_series.DECAY_HALflIVES:
             k = min((ref - d).days // h, kc)
             a = acc[(et, h)]
             a[0] += 1

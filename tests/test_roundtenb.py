@@ -11,6 +11,7 @@ import math
 import pytest
 
 from mysql_public_data_ingestor_spark.operators import daily_change
+from mysql_public_data_ingestor_spark.operators import events_sequence
 from mysql_public_data_ingestor_spark.operators import roundtenb
 from mysql_public_data_ingestor_spark.registry import all_queries
 from tools.check_correctness import compare, duck_connection
@@ -206,7 +207,7 @@ def test_session_duration_histogram_matches_python(spark, sf_dir):
                 start = u
             prev = u
         durs.append((prev - start) // 60_000_000)
-    edges = roundtenb.SESSDUR_EDGES
+    edges = events_sequence.SESSDUR_EDGES
     from collections import Counter
 
     def bucket(d: int) -> int:

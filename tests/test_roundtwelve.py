@@ -11,6 +11,7 @@ from collections import Counter, defaultdict
 import pytest
 
 from mysql_public_data_ingestor_spark.operators import graph_structure
+from mysql_public_data_ingestor_spark.operators import events_series
 from mysql_public_data_ingestor_spark.operators import roundtwelve as r12
 from mysql_public_data_ingestor_spark.registry import all_queries
 from mysql_public_data_ingestor_spark.tables import Tables
@@ -128,7 +129,7 @@ def test_fano_matches_python(spark, sf_dir):
     got = fn(spark, sf_dir).toPandas().sort_values("window_h")
     ev = Tables(spark, sf_dir).events.select("ts").toPandas()
     micros = [int(ts.value // 1000) for ts in ev["ts"]]  # ns -> us
-    assert list(got["window_h"]) == sorted(r12.FANO_WINDOWS_H)
+    assert list(got["window_h"]) == sorted(events_series.FANO_WINDOWS_H)
     for r in got.itertuples():
         w = int(r.window_h) * 3600 * 1_000_000
         cnt = Counter(us // w for us in micros)

@@ -13,6 +13,7 @@ from collections import Counter, defaultdict
 
 import pytest
 
+from mysql_public_data_ingestor_spark.operators import events_sequence
 from mysql_public_data_ingestor_spark.operators import roundtwelve2 as r122
 from mysql_public_data_ingestor_spark.registry import all_queries
 from mysql_public_data_ingestor_spark.tables import Tables
@@ -163,7 +164,7 @@ def test_gap_sensitivity_matches_python(spark, sf_dir):
         for (a, _), (b, _) in zip(rows, rows[1:]):
             gaps.append(b - a)
     n_users, n_events = len(by_user), len(ev)
-    assert list(got["gap_s"]) == sorted(r122.SESSION_GAPS_S)
+    assert list(got["gap_s"]) == sorted(events_sequence.SESSION_GAPS_S)
     prev_sessions = None
     for row in got.itertuples():
         thr_us = int(row.gap_s) * 1_000_000

@@ -215,6 +215,9 @@ _VOLATILE = (
     (re.compile(r"_[0-9a-f]{12}\b"), "_TAG"),
     (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
     (re.compile(r"plan_id=\d+"), "plan_id=N"),
+    # a higher-order function's variables (``lambda x_12``) are numbered
+    # from a process-wide counter; a column's name (``o_0``) is kept
+    (re.compile(r"\blambda ([A-Za-z]+)_\d+\b"), r"lambda \1_N"),
 )
 _OPERATOR = re.compile(r"^\(\d+\) (\S.*?)(?: \[codegen id : \d+\])?\s*$", re.M)
 
