@@ -30,7 +30,6 @@ from ..functions.textnorm import (
     sha256_prefix_i64,
     shingle_base_hash_udf,
     whitespace_tokens,
-    word_shingles,
 )
 from ..functions.partitioning import cpu_repartition
 from ..registry import register

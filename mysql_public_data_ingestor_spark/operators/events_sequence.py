@@ -288,28 +288,30 @@ def events_absorbing_markov_steps(spark: SparkSession, sf_dir: str) -> DataFrame
             total = term if total is None else total + term
         return total
 
+    # one row per transient state, all read off the same 1-row
+    # aggregate (one scan, one lag window); the shared determinant is
+    # projected once rather than restated in every row
+    dd = F.col("dd")
     rows = []
     for j, st in enumerate(ts):
 
         def entry_j(r, c, _j=j):
             return F.col(f"cf{r}") if c == _j else a(r, c)
 
-        dd = det(a)
-        dj = det(entry_j)
         rows.append(
-            m.select(
+            F.struct(
                 F.lit(st).alias("state"),
                 F.col(f"cf{j}").cast("long").alias("n_out"),
-                F.when(dd != 0, round_big_int_ratio(dj, dd)).alias(
+                F.when(dd != 0, round_big_int_ratio(det(entry_j), dd)).alias(
                     "expected_steps"
                 ),
-                dd.alias("_dd"),
-            ).filter(F.col("_dd") != 0).drop("_dd")
+            )
         )
-    out = rows[0]
-    for r in rows[1:]:
-        out = out.unionByName(r)
-    return out
+    return (
+        m.select("*", det(a).alias("dd"))
+        .filter(dd != 0)
+        .select(F.inline(F.array(*rows)))
+    )
 
 
 # ---------------------------------------------------------------------------

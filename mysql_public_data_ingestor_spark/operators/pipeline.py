@@ -314,7 +314,7 @@ def pipeline_corpus_prep_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # staged projections: the sha2-per-token milli-sum materializes once
     # before the quality floor references it three times (see
-    # ml._scored_labeled for the measured 4.5x cost of inlining it)
+    # ml_scores._scored_labeled_build for the measured 4.5x cost of inlining it)
     # softsign floor as an exact integer test: (D+m)/(2D) >= 47/100
     # <=> 100*(D+m) >= 94*D with D = 1000 n + |m|
     d_col = F.lit(1000) * F.col("n_tokens") + F.abs(F.col("ms"))

@@ -20,6 +20,9 @@ with the other stats queries.
 
 ``events_hourly_entropy_profile`` and ``events_runs_test_daily`` live in
 ``operators/events_series.py`` with the other events queries.
+
+``ml_calibration_slope_intercept`` and ``ml_logistic_fit_quality`` live
+in ``operators/ml_calibration.py`` with the other ml queries.
 """
 
 from __future__ import annotations
@@ -28,7 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions.exact import dec38, order_cents
+from ..functions.exact import order_cents
 from ..registry import register
 from ..tables import Tables
 
@@ -135,105 +138,6 @@ def similarity_ivfpq_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame
         "probe_id",
         "n_hits",
         round_int_ratio(F.col("n_hits"), F.lit(PQ_TOPK)).alias("recall"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# 4. Logistic-model fit diagnostics (VERDICT r7 item 5)
-# ---------------------------------------------------------------------------
-
-
-def _logit_quality_oracle() -> str:
-    from ..functions.exact import sql_round_int_ratio
-    from .stats_models import logit_cte_chain
-
-    ctes, w0, w1 = logit_cte_chain()
-    p = f"1.0 / (1.0 + exp(-(({w0}) / 1000000.0 + ({w1}) / 1000000.0 * x)))"
-    return (
-        "WITH "
-        + ", ".join(ctes)
-        + f"""
-    , sc AS (SELECT x, y, {p} AS p FROM base)
-    , a AS (
-      SELECT CAST(count(*) AS BIGINT) AS n,
-             CAST(sum(CAST(y AS BIGINT)) AS BIGINT) AS n_pos,
-             CAST(sum(CASE WHEN (p >= 0.5) = (y = 1.0) THEN 1 ELSE 0 END)
-                  AS BIGINT) AS n_correct,
-             sum(CAST(floor(p * 1000000.0 + 0.5) AS BIGINT)) AS sum_p_micro,
-             sum(CAST(floor((p - y) * (p - y) * 1000000.0 + 0.5) AS BIGINT))
-               AS sse_micro
-      FROM sc)
-    SELECT n, n_pos, n_correct,
-           {sql_round_int_ratio('n_pos', 'n')} AS pos_rate,
-           {sql_round_int_ratio('sum_p_micro', '1000000 * n')} AS mean_p,
-           {sql_round_int_ratio('sse_micro', '1000000 * n')} AS brier,
-           {sql_round_int_ratio('n_correct', 'n')} AS accuracy
-    FROM a
-    """
-    )
-
-
-@register("ml_logistic_fit_quality", oracle=_logit_quality_oracle())
-def ml_logistic_fit_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Residual diagnostics of the in-warehouse GD logistic model
-    (``stats_logistic_gd``): Brier score (mean squared residual),
-    accuracy at 0.5, and calibration-in-the-large (mean predicted p vs
-    observed positive rate) — the "is the trained model any good"
-    audit VERDICT r7 item 5 asked to sit next to the trainer.
-
-    Brier rather than ln-deviance by design: the deviance needs ln(p)
-    per ROW of a continuous score, which would put the interpreted
-    det-ln fold on a row-bounded domain (the exact anti-pattern
-    SCALE.md §5e documents); the Brier score is a strictly proper
-    scoring rule with purely polynomial arithmetic — per-row quantized
-    residuals, exact integer sums, exact final ratios.
-
-    Scale: ONE scan of the training frame scored with the broadcast
-    1-row weight table (the training steps themselves are
-    localCheckpointed 2-value aggregates, shared with the trajectory
-    query via ``logit_weight_steps``).
-    """
-    from ..functions.exact import round_int_ratio
-    from .stats_models import logit_base, logit_sigmoid, logit_weight_steps
-
-    t = Tables(spark, sf_dir)
-    w = logit_weight_steps(t)[-1]
-    p = logit_sigmoid(F.col("x"), F.col("w0q"), F.col("w1q"))
-    sc = logit_base(t).crossJoin(F.broadcast(w)).select(
-        F.col("y"),
-        p.alias("p"),
-    )
-    a = sc.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("y").cast("long")).alias("n_pos"),
-        # predict 1 iff p >= 0.5: correct contributes y there, 1-y below
-        F.sum(
-            F.when(F.col("p") >= 0.5, F.col("y").cast("long")).otherwise(
-                F.lit(1) - F.col("y").cast("long")
-            )
-        ).alias("n_correct"),
-        F.sum(F.floor(F.col("p") * F.lit(1e6) + F.lit(0.5)).cast("long")).alias(
-            "sum_p_micro"
-        ),
-        F.sum(
-            F.floor(
-                (F.col("p") - F.col("y")) * (F.col("p") - F.col("y")) * F.lit(1e6)
-                + F.lit(0.5)
-            ).cast("long")
-        ).alias("sse_micro"),
-    )
-    return a.select(
-        "n",
-        "n_pos",
-        "n_correct",
-        round_int_ratio(F.col("n_pos"), F.col("n")).alias("pos_rate"),
-        round_int_ratio(F.col("sum_p_micro"), F.lit(1000000) * F.col("n")).alias(
-            "mean_p"
-        ),
-        round_int_ratio(F.col("sse_micro"), F.lit(1000000) * F.col("n")).alias(
-            "brier"
-        ),
-        round_int_ratio(F.col("n_correct"), F.col("n")).alias("accuracy"),
     )
 
 
@@ -486,98 +390,6 @@ def corpus_ngram_novelty_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n_gram_instances") > 0,
             round_int_ratio(F.col("n_new_grams"), F.col("n_gram_instances")),
         ),
-    )
-
-
-# ---------------------------------------------------------------------------
-# 14. Logistic calibration slope / intercept (linear recalibration)
-# ---------------------------------------------------------------------------
-
-
-def _calibration_oracle() -> str:
-    from .stats_models import logit_cte_chain
-
-    ctes, w0, w1 = logit_cte_chain()
-    p = f"1.0 / (1.0 + exp(-(({w0}) / 1000000.0 + ({w1}) / 1000000.0 * x)))"
-    slope = (
-        "(CAST(n AS DOUBLE) * spy - CAST(sp AS DOUBLE) * sy)"
-        " / (CAST(n AS DOUBLE) * spp - CAST(sp AS DOUBLE) * sp)"
-    )
-    # intercept is rescaling-invariant: a = mean(y) - b_micro * mean(p_u)
-    intercept = f"(CAST(sy AS DOUBLE) - ({slope}) * sp) / n"
-    return (
-        "WITH "
-        + ", ".join(ctes)
-        + f"""
-    , sc AS (SELECT CAST(floor({p} * 1000000.0 + 0.5) AS BIGINT) AS p_u,
-                    CAST(y AS BIGINT) AS yi FROM base)
-    , a AS (
-      SELECT CAST(count(*) AS BIGINT) AS n,
-             CAST(sum(p_u) AS HUGEINT) AS sp,
-             CAST(sum(p_u::HUGEINT * p_u) AS HUGEINT) AS spp,
-             CAST(sum(yi) AS BIGINT) AS sy,
-             CAST(sum(p_u * yi) AS HUGEINT) AS spy
-      FROM sc)
-    SELECT n, sy AS n_pos,
-           CASE WHEN CAST(n AS DOUBLE) * spp - CAST(sp AS DOUBLE) * sp > 0 THEN
-             CAST(floor(({slope}) * 1000000.0 * 1000000.0 + 0.5) AS BIGINT)
-               / 1000000.0
-           END AS calib_slope_micro,
-           CASE WHEN CAST(n AS DOUBLE) * spp - CAST(sp AS DOUBLE) * sp > 0 THEN
-             CAST(floor(({intercept}) * 1000000.0 + 0.5) AS BIGINT) / 1000000.0
-           END AS calib_intercept
-    FROM a
-    """
-    )
-
-
-@register("ml_calibration_slope_intercept", oracle=_calibration_oracle())
-def ml_calibration_slope_intercept(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Linear recalibration line of the GD logistic model: OLS of the
-    binary label on the predicted probability (slope 1, intercept 0 =
-    perfectly calibrated; slope < 1 = overconfident). The
-    slope/intercept pair is the standard recalibration audit next to
-    ``ml_logistic_fit_quality``'s calibration-in-the-large.
-
-    Predictions quantize to micro-units per row; all five sufficient
-    statistics are exact integer sums in ONE scan, and slope/intercept
-    assemble as identical IEEE expressions off them (slope reported in
-    micro-probability units to keep the quantized-domain arithmetic
-    transparent). Degenerate zero-variance predictions yield NULL.
-    """
-    from .stats_models import logit_base, logit_sigmoid, logit_weight_steps
-
-    t = Tables(spark, sf_dir)
-    w = logit_weight_steps(t)[-1]
-    p = logit_sigmoid(F.col("x"), F.col("w0q"), F.col("w1q"))
-    sc = logit_base(t).crossJoin(F.broadcast(w)).select(
-        F.floor(p * F.lit(1e6) + F.lit(0.5)).cast("long").alias("p_u"),
-        F.col("y").cast("long").alias("yi"),
-    )
-    a = sc.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(dec38(F.col("p_u"))).alias("sp"),
-        F.sum(dec38(F.col("p_u")) * F.col("p_u")).alias("spp"),
-        F.sum("yi").cast("long").alias("sy"),
-        F.sum(dec38(F.col("p_u") * F.col("yi"))).alias("spy"),
-    )
-    nd = F.col("n").cast("double")
-    spd = F.col("sp").cast("double")
-    var = nd * F.col("spp").cast("double") - spd * spd
-    slope = (nd * F.col("spy").cast("double") - spd * F.col("sy").cast("double")) / var
-    intercept = (F.col("sy").cast("double") - slope * spd) / F.col("n")
-    return a.select(
-        "n",
-        F.col("sy").alias("n_pos"),
-        F.when(
-            var > 0,
-            F.floor(slope * F.lit(1e6) * F.lit(1e6) + F.lit(0.5)).cast("long")
-            / F.lit(1e6),
-        ).alias("calib_slope_micro"),
-        F.when(
-            var > 0,
-            F.floor(intercept * F.lit(1e6) + F.lit(0.5)).cast("long") / F.lit(1e6),
-        ).alias("calib_intercept"),
     )
 
 # ---------------------------------------------------------------------------

@@ -23,6 +23,9 @@ in ``operators/stats_rank.py`` with the other stats queries.
 ``operators/events_sequence.py``; ``events_bass_diffusion_fit`` and
 ``events_granger_lag1_test`` live in ``operators/events_series.py`` with
 the other events queries.
+
+``ml_brier_skill_score`` lives in ``operators/ml_calibration.py`` with
+the other ml queries.
 """
 
 from __future__ import annotations
@@ -34,6 +37,7 @@ from pyspark.sql.window import Window
 from ..functions.exact import dec38, halfup_div, order_cents, sql_halfup_div
 from ..registry import register
 from ..tables import Tables
+from .ml_scores import scored_labeled, scored_labeled_sql
 
 
 # ---------------------------------------------------------------------------
@@ -494,11 +498,10 @@ def dq_digit_preference_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _dup_quality_oracle() -> str:
-    from .ml import _scored_labeled_sql
     from ..functions.exact import sql_round_int_ratio
 
     return (
-        _scored_labeled_sql()
+        scored_labeled_sql()
         + f"""
     , clus AS (
       SELECT doc_id, CAST(count(*) OVER (PARTITION BY sha256(text)) AS BIGINT)
@@ -548,11 +551,10 @@ def corpus_dup_quality_quadrant(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-cluster size rides a hash-partitioned window over the cluster
     key (never SinglePartition).
     """
-    from .ml import _scored_labeled
     from ..functions.exact import round_int_ratio
 
     t = Tables(spark, sf_dir)
-    s = _scored_labeled(t).select("doc_id", "label")
+    s = scored_labeled(t).select("doc_id", "label")
     clus = t.documents.select(
         "doc_id",
         F.count(F.lit(1))
@@ -602,12 +604,11 @@ MIA_SPLIT_MOD = 5  # hash % 5 < 4 -> "train", else holdout
 
 
 def _mia_oracle() -> str:
-    from .ml import _scored_labeled_sql
     from ..functions.exact import sql_round_int_ratio
 
     m = MIA_SPLIT_MOD
     return (
-        _scored_labeled_sql()
+        scored_labeled_sql()
         + f"""
     , lab AS (
       SELECT score_q,
@@ -662,13 +663,12 @@ def privacy_membership_inference_audit(spark: SparkSession, sf_dir: str) -> Data
     auc_gap = |auc - 0.5| is a derived column of the SAME quantized
     value on both engines (abs of a quantized double — no re-rounding).
     """
-    from .ml import _scored_labeled
     from ..functions.exact import round_int_ratio
     from ..functions.textnorm import sha256_prefix_i64
 
     m = MIA_SPLIT_MOD
     t = Tables(spark, sf_dir)
-    s = _scored_labeled(t)
+    s = scored_labeled(t)
     lab = s.select(
         "score_q",
         F.when(
@@ -708,80 +708,6 @@ def privacy_membership_inference_audit(spark: SparkSession, sf_dir: str) -> Data
         F.col("n_holdout").cast("long").alias("n_holdout"),
         F.when(ok, auc).alias("mia_auc"),
         F.when(ok, F.abs(auc - F.lit(0.5))).alias("auc_gap"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# 13. Brier skill score vs the climatology reference, per language
-# ---------------------------------------------------------------------------
-
-
-def _bss_oracle() -> str:
-    from .ml import _scored_labeled_sql
-    from ..functions.exact import sql_round_big_int_ratio
-
-    return (
-        _scored_labeled_sql()
-        + f"""
-    , terms AS (
-      SELECT lang, CAST(count(*) AS HUGEINT) AS n,
-             CAST(sum(label) AS HUGEINT) AS pos,
-             CAST(sum((score_q - 10000 * label)::HUGEINT
-                      * (score_q - 10000 * label)) AS HUGEINT) AS sd2
-      FROM scored GROUP BY lang
-    )
-    SELECT lang, CAST(n AS BIGINT) AS n, CAST(pos AS BIGINT) AS n_pos,
-           {sql_round_big_int_ratio('sd2', '100000000::HUGEINT * n')}
-             AS brier,
-           CASE WHEN pos > 0 AND pos < n THEN
-             {sql_round_big_int_ratio(
-                 '100000000::HUGEINT * pos * (n - pos) - n * sd2',
-                 '100000000::HUGEINT * pos * (n - pos)')}
-           END AS brier_skill
-    FROM terms
-    """
-    )
-
-
-@register("ml_brier_skill_score", _bss_oracle())
-def ml_brier_skill_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Brier skill score of the classifier against the per-language
-    climatology reference: BSS = 1 − BS/BS_ref with BS_ref =
-    p̄(1−p̄) (always-predict-the-base-rate) — the SKILL normalization
-    the raw Brier score (ml_brier_score_by_lang) and its
-    decomposition lack: BS is incomparable across groups with
-    different base rates, BSS > 0 means the model beats knowing the
-    base rate at all.
-
-    With p = score_q/10⁴, 10⁸·BS·n = Σ(score_q − 10⁴y)² and
-    10⁸·BS_ref·n² = 10⁸·pos·(n−pos), so BSS =
-    (10⁸·pos·(n−pos) − n·Σd²)/(10⁸·pos·(n−pos)) — exact 128-bit
-    integers, one round_big_int_ratio per language; one-class groups
-    (pos ∈ {0, n}) yield NULL identically. One partial-aggregated
-    scan to ≤ 5 rows.
-    """
-    from .ml import _scored_labeled
-    from ..functions.exact import round_big_int_ratio
-
-    t = Tables(spark, sf_dir)
-    s = _scored_labeled(t)
-    d = F.col("score_q") - F.lit(10000) * F.col("label")
-    terms = s.groupBy("lang").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("label").alias("pos"),
-        F.sum(dec38(d) * dec38(d)).alias("sd2"),
-    )
-    e8 = F.lit(10**8).cast("decimal(38,0)")
-    ref = e8 * dec38(F.col("pos")) * dec38(F.col("n") - F.col("pos"))
-    return terms.select(
-        "lang",
-        "n",
-        F.col("pos").alias("n_pos"),
-        round_big_int_ratio(F.col("sd2"), e8 * dec38(F.col("n"))).alias("brier"),
-        F.when(
-            (F.col("pos") > 0) & (F.col("pos") < F.col("n")),
-            round_big_int_ratio(ref - dec38(F.col("n")) * F.col("sd2"), ref),
-        ).alias("brier_skill"),
     )
 
 

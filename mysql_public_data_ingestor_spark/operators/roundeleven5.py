@@ -12,6 +12,9 @@ estimates, exactly reproducible cross-engine).
 
 Reference parity note: the reference (Go ingestion pipeline) has no
 analytics; these extend SURVEY §2.C sketches/privacy and §2.B ML-eval.
+
+``ml_roc_convex_hull`` lives in ``operators/ml_ranking.py`` with the
+other ml queries.
 """
 
 from __future__ import annotations
@@ -133,129 +136,6 @@ def sketch_countmedian_topk_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.abs(F.col("est_n") - F.col("exact_n")).cast("long").alias("abs_err"),
         )
         .orderBy(F.col("exact_n").desc(), "user_id")
-    )
-
-
-# ---------------------------------------------------------------------------
-# 2. ROC convex hull (the achievable-classifier frontier)
-# ---------------------------------------------------------------------------
-
-
-def _roc_hull_oracle() -> str:
-    from ..functions.exact import sql_round_int_ratio
-    from .ml import _scored_labeled_sql
-
-    return (
-        _scored_labeled_sql()
-        + f"""
-    , bins AS (
-      SELECT least(score_q // 100, 100) AS bin,
-             CAST(sum(label) AS BIGINT) AS pos,
-             CAST(count(*) - sum(label) AS BIGINT) AS neg
-      FROM scored GROUP BY 1
-    ), tot AS (
-      SELECT CAST(sum(pos) AS BIGINT) AS p, CAST(sum(neg) AS BIGINT) AS nn
-      FROM bins
-    ), pts0 AS (
-      -- threshold t: predict positive when bin >= t  (t in 0..101)
-      SELECT t.t,
-             CAST(coalesce(sum(b.pos), 0) AS BIGINT) AS tp,
-             CAST(coalesce(sum(b.neg), 0) AS BIGINT) AS fp
-      FROM (SELECT unnest(range(0, 102)) AS t) t
-      LEFT JOIN bins b ON b.bin >= t.t
-      GROUP BY t.t
-    ), pts AS (
-      -- one point per distinct fp: the best (max tp) classifier there
-      SELECT fp, CAST(max(tp) AS BIGINT) AS tp FROM pts0 GROUP BY fp
-    ), hull AS (
-      SELECT i.fp, i.tp FROM pts i
-      WHERE NOT EXISTS (
-        SELECT 1 FROM pts j, pts k
-        WHERE j.fp <= i.fp AND k.fp >= i.fp AND j.fp < k.fp
-          AND i.tp * (k.fp - j.fp) < j.tp * (k.fp - i.fp) + k.tp * (i.fp - j.fp)
-      )
-    )
-    SELECT h.fp AS fp_count, h.tp AS tp_count,
-           {sql_round_int_ratio('h.fp', 'tot.nn')} AS fpr,
-           {sql_round_int_ratio('h.tp', 'tot.p')} AS tpr
-    FROM hull h, tot ORDER BY fp_count
-    """
-    )
-
-
-@register("ml_roc_convex_hull", oracle=_roc_hull_oracle())
-def ml_roc_convex_hull(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ROC CONVEX HULL of the quality classifier against the rule-gate
-    label: the subset of threshold operating points not strictly below
-    any chord between two other points — the achievable frontier
-    (Provost-Fawcett): any point off the hull is dominated at EVERY
-    cost/class-prior by a randomized mixture of two hull points, so
-    the hull is what cost-based threshold pickers
-    (``ml_cost_optimal_threshold``) should search.
-
-    Exactness: operating points come from the bounded 101-bin score
-    cumulative (bin = score_q // 100); the chord test
-    tp_i (fp_k - fp_j) >= tp_j (fp_k - fp_i) + tp_k (fp_i - fp_j) is
-    exact integer cross-multiplication — no slopes, no division.
-
-    Scale shape: one scored scan to <=101 bins; thresholds, points and
-    the O(101^3) dominance test are all bounded BY MECHANISM
-    (score-bin domain, not data size) via broadcast non-equi joins.
-    """
-    from ..functions.exact import round_int_ratio
-    from .ml import _scored_labeled
-
-    t = Tables(spark, sf_dir)
-    scored = _scored_labeled(t)
-    # localCheckpoint: five downstream branches (totals, points, both
-    # chord sides, the hull anti-join) would otherwise each re-run the
-    # sha-heavy scored scan — the decontaminate-op convention for a
-    # tiny frame feeding many branches (<=101 rows here)
-    bins = scored.groupBy(
-        F.least(F.col("score_q") / 100, F.lit(100)).cast("long").alias("bin")
-    ).agg(
-        F.sum("label").cast("long").alias("pos"),
-        (F.count(F.lit(1)) - F.sum("label")).cast("long").alias("neg"),
-    ).localCheckpoint(eager=False)
-    tot = bins.agg(
-        F.sum("pos").cast("long").alias("p"), F.sum("neg").cast("long").alias("nn")
-    )
-    ts = bins.sparkSession.range(0, 102).select(F.col("id").alias("t"))
-    pts0 = (
-        ts.join(F.broadcast(bins), F.col("bin") >= F.col("t"), "left")
-        .groupBy("t")
-        .agg(
-            F.coalesce(F.sum("pos"), F.lit(0)).cast("long").alias("tp"),
-            F.coalesce(F.sum("neg"), F.lit(0)).cast("long").alias("fp"),
-        )
-    )
-    pts = pts0.groupBy("fp").agg(F.max("tp").alias("tp"))
-    j = pts.select(F.col("fp").alias("fp_j"), F.col("tp").alias("tp_j"))
-    k = pts.select(F.col("fp").alias("fp_k"), F.col("tp").alias("tp_k"))
-    dominated = (
-        pts.join(F.broadcast(j), F.col("fp_j") <= F.col("fp"))
-        .join(
-            F.broadcast(k),
-            (F.col("fp_k") >= F.col("fp")) & (F.col("fp_j") < F.col("fp_k")),
-        )
-        .filter(
-            F.col("tp") * (F.col("fp_k") - F.col("fp_j"))
-            < F.col("tp_j") * (F.col("fp_k") - F.col("fp"))
-            + F.col("tp_k") * (F.col("fp") - F.col("fp_j"))
-        )
-        .select("fp")
-        .distinct()
-    )
-    hull = pts.join(dominated, "fp", "left_anti")
-    return (
-        hull.crossJoin(F.broadcast(tot))
-        .select(
-            F.col("fp").alias("fp_count"),
-            F.col("tp").alias("tp_count"),
-            round_int_ratio(F.col("fp"), F.col("nn")).alias("fpr"),
-            round_int_ratio(F.col("tp"), F.col("p")).alias("tpr"),
-        )
-        .orderBy("fp_count")
     )
 
 

@@ -12,6 +12,9 @@ SinglePartition and no-cartesian plan sweeps.
 ``events_scd_asof_snapshot`` live in ``operators/events_sequence.py``;
 ``events_hourly_topk_users`` lives in ``operators/events_series.py``
 with the other events queries.
+
+``ml_confusion_threshold_sweep`` lives in ``operators/ml_thresholds.py``
+with the other ml queries.
 """
 
 from __future__ import annotations
@@ -1030,86 +1033,6 @@ def text_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         "guessed_lang",
         "n_docs",
         round_int_ratio(F.col("n_docs"), F.sum("n_docs").over(w)).alias("row_share"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# 17. Classifier threshold sweep (PR table; completes the eval trio)
-# ---------------------------------------------------------------------------
-
-SWEEP_THRESHOLDS = [1000, 3000, 5000, 7000, 9000]  # score_q cut points
-
-
-def _sweep_oracle() -> str:
-    from ..functions.exact import sql_round_int_ratio
-    from .ml import _scored_labeled_sql
-
-    thr = ", ".join(f"({t})" for t in SWEEP_THRESHOLDS)
-    prec = sql_round_int_ratio("sum(CASE WHEN score_q >= t AND label = 1 THEN 1 ELSE 0 END)",
-                               "greatest(sum(CASE WHEN score_q >= t THEN 1 ELSE 0 END), 1)")
-    rec = sql_round_int_ratio("sum(CASE WHEN score_q >= t AND label = 1 THEN 1 ELSE 0 END)",
-                              "greatest(sum(label), 1)")
-    return (
-        _scored_labeled_sql()
-        + f"""
-    SELECT CAST(t AS BIGINT) AS threshold_q,
-           CAST(sum(CASE WHEN score_q >= t AND label = 1 THEN 1 ELSE 0 END) AS BIGINT) AS tp,
-           CAST(sum(CASE WHEN score_q >= t AND label = 0 THEN 1 ELSE 0 END) AS BIGINT) AS fp,
-           CAST(sum(CASE WHEN score_q < t AND label = 1 THEN 1 ELSE 0 END) AS BIGINT) AS fn,
-           CAST(sum(CASE WHEN score_q < t AND label = 0 THEN 1 ELSE 0 END) AS BIGINT) AS tn,
-           {prec} AS precision_,
-           {rec} AS recall_
-    FROM scored, (VALUES {thr}) s(t)
-    GROUP BY t
-    """
-    )
-
-
-@register("ml_confusion_threshold_sweep", oracle=_sweep_oracle())
-def ml_confusion_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Confusion counts and precision/recall of the hashed-feature
-    quality classifier at five fixed decision thresholds — the
-    operating-point table that completes the eval trio
-    (``ml_calibration_curve`` = is the score honest,
-    ``ml_auc_by_lang`` = does it rank, this = where to CUT).
-
-    Scale: the scored/labeled table is the same zero-join scan the
-    siblings use; the sweep crosses it with a 5-row literal threshold
-    table (broadcast) and reduces to 5 rows of integer counts —
-    precision/recall are exact half-up integer ratios, so the whole
-    artifact is hash-stable.
-    """
-    from ..functions.exact import round_int_ratio
-    from .ml import _scored_labeled
-
-    t = Tables(spark, sf_dir)
-    s = _scored_labeled(t)
-    # 5-row literal threshold table
-    thr_df = s.sparkSession.range(1).select(
-        F.explode(F.array(*[F.lit(v).cast("long") for v in SWEEP_THRESHOLDS])).alias(
-            "threshold_q"
-        )
-    )
-    crossed = s.crossJoin(F.broadcast(thr_df))
-    pred_pos = F.col("score_q") >= F.col("threshold_q")
-    agg = crossed.groupBy("threshold_q").agg(
-        F.sum(F.when(pred_pos & (F.col("label") == 1), 1).otherwise(0)).cast("long").alias("tp"),
-        F.sum(F.when(pred_pos & (F.col("label") == 0), 1).otherwise(0)).cast("long").alias("fp"),
-        F.sum(F.when(~pred_pos & (F.col("label") == 1), 1).otherwise(0)).cast("long").alias("fn"),
-        F.sum(F.when(~pred_pos & (F.col("label") == 0), 1).otherwise(0)).cast("long").alias("tn"),
-    )
-    return agg.select(
-        "threshold_q",
-        "tp",
-        "fp",
-        "fn",
-        "tn",
-        round_int_ratio(F.col("tp"), F.greatest(F.col("tp") + F.col("fp"), F.lit(1))).alias(
-            "precision_"
-        ),
-        round_int_ratio(F.col("tp"), F.greatest(F.col("tp") + F.col("fn"), F.lit(1))).alias(
-            "recall_"
-        ),
     )
 
 

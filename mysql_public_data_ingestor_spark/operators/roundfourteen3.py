@@ -15,6 +15,9 @@ rule).
 Reference parity note: the reference (Go ingestion pipeline,
 ``/root/reference/main.go``) has no analytics; these extend SURVEY
 §2.C privacy / ML.
+
+``ml_prg_at_operating_points`` lives in ``operators/ml_thresholds.py``
+with the other ml queries.
 """
 
 from __future__ import annotations
@@ -153,141 +156,4 @@ def privacy_generalization_info_loss(spark: SparkSession, sf_dir: str) -> DataFr
             .cast("long")
             .alias("ncp_micro"),
         )
-    )
-
-
-# ---------------------------------------------------------------------------
-# 2. Precision-recall-gain at the deployed operating points
-# ---------------------------------------------------------------------------
-
-
-def _prg_oracle() -> str:
-    from .ml import _scored_labeled_sql
-    from .roundthirteen7 import PRECISION_FLOORS
-
-    hd = sql_halfup_div
-    floors = ", ".join(f"({n}, {d})" for n, d in PRECISION_FLOORS)
-    return (
-        _scored_labeled_sql()
-        + f"""
-    , grid AS (
-      SELECT score_q, CAST(count(*) AS BIGINT) AS n,
-             CAST(sum(label) AS BIGINT) AS pos
-      FROM scored GROUP BY score_q
-    ), tot AS (
-      SELECT CAST(sum(n) AS BIGINT) AS nn, CAST(sum(pos) AS BIGINT) AS p
-      FROM grid
-    ), cum AS (
-      SELECT score_q AS v,
-             sum(n) OVER (ORDER BY score_q DESC
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS n_sel,
-             sum(pos) OVER (ORDER BY score_q DESC
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS tp
-      FROM grid
-    ), floors(pn, pd) AS (VALUES {floors}),
-    feasible AS (
-      SELECT f.pn, f.pd, c.v, c.n_sel, c.tp,
-             row_number() OVER (PARTITION BY f.pn, f.pd
-               ORDER BY c.tp DESC, c.v ASC) AS r
-      FROM floors f JOIN cum c ON c.tp * f.pd >= c.n_sel * f.pn
-    )
-    SELECT CAST(f.pn AS BIGINT) AS floor_num, CAST(f.pd AS BIGINT) AS floor_den,
-           CAST(b.v AS BIGINT) AS threshold_q,
-           CASE WHEN b.v IS NOT NULL AND b.tp > 0 THEN
-             CAST({hd('1000000::HUGEINT * (CAST(b.tp AS HUGEINT) * t.nn'
-                      ' - CAST(t.p AS HUGEINT) * b.n_sel)',
-                      'CAST(b.tp AS HUGEINT) * (t.nn - t.p)')} AS BIGINT) END
-             AS prec_gain_micro,
-           CASE WHEN b.v IS NOT NULL AND b.tp > 0 THEN
-             CAST({hd('1000000::HUGEINT * (CAST(b.tp AS HUGEINT) * t.nn'
-                      ' - CAST(t.p AS HUGEINT) * t.p)',
-                      'CAST(b.tp AS HUGEINT) * (t.nn - t.p)')} AS BIGINT) END
-             AS rec_gain_micro
-    FROM floors f
-    LEFT JOIN (SELECT * FROM feasible WHERE r = 1) b
-      ON b.pn = f.pn AND b.pd = f.pd, tot t
-    ORDER BY f.pn * 1.0 / f.pd
-    """
-    )
-
-
-@register("ml_prg_at_operating_points", _prg_oracle())
-def ml_prg_at_operating_points(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Precision-recall GAIN (Flach & Kull, NeurIPS 2015) at the
-    deployed precision-floor operating points: precG = (prec - pi) /
-    ((1 - pi) prec) and recG = (rec - pi) / ((1 - pi) rec), where pi
-    is the base rate — the transform that fixes raw PR's known
-    pathologies (a precision of 0.9 is trivial when pi = 0.89 and
-    heroic when pi = 0.01; raw PR can't tell them apart, PRG maps the
-    always-positive baseline to gain 0 and the perfect classifier to
-    1). Reported at the SAME thresholds ``ml_recall_at_precision_floor``
-    deploys, so the two tables read side by side: a floor that looks
-    fine in raw precision but has near-zero precision GAIN is buying
-    nothing over predict-all.
-
-    Exactness: tp / n_sel off the descending score-grid cumulative
-    (exact integers; the same derivation shape as the operating-point
-    op); both gains collapse to single half-up micro divisions of
-    cross-multiplied integers — precG = (tp N - P n_sel) / (tp (N -
-    P)), recG = (tp N - P^2) / (tp (N - P)) — signed (gain < 0 means
-    worse than baseline), NULL for infeasible floors or tp = 0.
-
-    Scale shape: one scored scan to the <= 10001-value grid; the
-    shared cumulative is the fbeta/Youden allowlist class (flagged for
-    activation time); 3 rows out.
-    """
-    from pyspark.sql.window import Window
-
-    from .ml import _scored_labeled
-    from .roundthirteen7 import PRECISION_FLOORS
-
-    t = Tables(spark, sf_dir)
-    grid = _scored_labeled(t).groupBy("score_q").agg(
-        F.count(F.lit(1)).alias("n"), F.sum("label").alias("pos")
-    )
-    tot = grid.agg(
-        F.sum("n").cast("long").alias("nn"), F.sum("pos").cast("long").alias("p")
-    )
-    w = Window.orderBy(F.col("score_q").desc()).rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    cum = grid.select(
-        F.col("score_q").alias("v"),
-        F.sum("n").over(w).cast("long").alias("n_sel"),
-        F.sum("pos").over(w).cast("long").alias("tp"),
-    )
-    floors = grid.sparkSession.createDataFrame(
-        [(n, d) for n, d in PRECISION_FLOORS], "pn long, pd long"
-    )
-    feasible = floors.join(
-        cum, F.col("tp") * F.col("pd") >= F.col("n_sel") * F.col("pn")
-    )
-    wb = Window.partitionBy("pn", "pd").orderBy(F.col("tp").desc(), F.col("v").asc())
-    best = (
-        feasible.withColumn("r", F.row_number().over(wb))
-        .filter(F.col("r") == 1)
-        .select("pn", "pd", "v", "n_sel", "tp")
-    )
-    m6 = F.lit(1_000_000).cast("decimal(38,0)")
-    den = dec38(F.col("tp")) * dec38(F.col("nn") - F.col("p"))
-    prec_g = halfup_div(
-        m6 * (dec38(F.col("tp")) * F.col("nn") - dec38(F.col("p")) * F.col("n_sel")),
-        den,
-    )
-    rec_g = halfup_div(
-        m6 * (dec38(F.col("tp")) * F.col("nn") - dec38(F.col("p")) * F.col("p")),
-        den,
-    )
-    ok = F.col("v").isNotNull() & (F.col("tp") > 0)
-    return (
-        floors.join(best, ["pn", "pd"], "left")
-        .crossJoin(F.broadcast(tot))
-        .select(
-            F.col("pn").alias("floor_num"),
-            F.col("pd").alias("floor_den"),
-            F.col("v").alias("threshold_q"),
-            F.when(ok, prec_g.cast("long")).alias("prec_gain_micro"),
-            F.when(ok, rec_g.cast("long")).alias("rec_gain_micro"),
-        )
-        .orderBy(F.col("floor_num").cast("double") / F.col("floor_den"))
     )

@@ -24,6 +24,9 @@ live in the ``graph_*`` domain modules.
 Reference parity note: the reference (Go ingestion pipeline,
 ``/root/reference/main.go``) has no analytics; these extend SURVEY
 §2.C graph analytics / ML / corpus management / dedup.
+
+``ml_pav_reliability_diagram`` lives in ``operators/ml_calibration.py``
+with the other ml queries.
 """
 
 from __future__ import annotations
@@ -34,122 +37,6 @@ from pyspark.sql import functions as F
 from ..functions.exact import dec38, halfup_div, sql_halfup_div
 from ..registry import register
 from ..tables import Tables
-
-
-# ---------------------------------------------------------------------------
-# 4. PAV reliability-diagram export
-# ---------------------------------------------------------------------------
-
-
-def _pav_diagram_oracle() -> str:
-    from .ml import _scored_labeled_sql
-    from .roundten3 import ISO_BINS, _sql_iso_fit_ctes
-
-    width = 10000 // ISO_BINS
-    hd = sql_halfup_div
-    return (
-        _scored_labeled_sql()
-        + ", "
-        + _sql_iso_fit_ctes()
-        + f"""
-    , binsum AS (
-      SELECT CAST(least(score_q // {width}, {ISO_BINS - 1}) AS BIGINT) AS bin,
-             CAST(sum(score_q) AS HUGEINT) AS ssum
-      FROM scored GROUP BY 1
-    ), blocks AS (
-      SELECT f.v,
-             CAST(sum(f.n) AS HUGEINT) AS n_b,
-             CAST(sum(f.pos) AS HUGEINT) AS pos_b,
-             CAST(sum(s.ssum) AS HUGEINT) AS ssum_b
-      FROM fit f JOIN binsum s ON s.bin = f.bin
-      GROUP BY f.v
-    )
-    SELECT CAST({hd('1000000::HUGEINT * pos_b', 'n_b')} AS BIGINT)
-             AS fitted_micro,
-           CAST(n_b AS BIGINT) AS n_b,
-           CAST(pos_b AS BIGINT) AS pos_b,
-           CAST({hd('100::HUGEINT * ssum_b', 'n_b')} AS BIGINT)
-             AS mean_score_micro,
-           CAST({hd('100::HUGEINT * ssum_b', 'n_b')}
-                - {hd('1000000::HUGEINT * pos_b', 'n_b')} AS BIGINT)
-             AS gap_micro
-    FROM blocks ORDER BY fitted_micro
-    """
-    )
-
-
-@register("ml_pav_reliability_diagram", oracle=_pav_diagram_oracle())
-def ml_pav_reliability_diagram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Reliability diagram over the PAV (isotonic) calibration blocks
-    — the per-block export behind ``ml_brier_pav_decomposition``'s
-    scalars (VERDICT r13 item 4: "a PAV reliability-diagram export
-    beside ml_brier_pav_decomposition"). Each row is one maximal
-    isotonic block: its fitted probability (the block positive rate —
-    what PAV would recalibrate TO), size, positive count, mean raw
-    score (what the classifier said), and the signed gap. Decile
-    reliability diagrams (``ml_calibration_curve``) impose arbitrary
-    bins; the PAV blocks are the CANONICAL bins — the coarsest
-    partition on which the empirical rates are monotone — so the gap
-    column IS the reliability component, block by block (Dimitriadis,
-    Gneiting & Jordan 2021 CORP reliability diagrams).
-
-    Derivation sharing: ``ml._scored_labeled`` scan and the
-    ``roundten3._iso_fit`` prefix-sum minimax PAV over the shared
-    20-bin grid (existing shared helpers, unchanged — no evidence
-    invalidation; this is the fourth consumer of the fit).
-
-    Exactness: block counts are exact integers off the bounded bin
-    grid; fitted rate, mean score and gap are single half-up micro
-    divisions (the gap is the exact integer difference of the two
-    published quotients, so diagram and decomposition are consistent
-    by construction).
-
-    Scale shape: everything after the partial-aggregated document scan
-    runs on the <= 20-bin POST-AGGREGATION grid; the 20-row grid is
-    eagerly localCheckpointed so the fit's minimax chain pins the
-    sha2 scoring scan to ONE execution (the Brier-PAV discipline).
-    <= 20 rows out.
-    """
-    from .ml import _scored_labeled
-    from .roundten3 import ISO_BINS, _iso_fit
-
-    t = Tables(spark, sf_dir)
-    width = 10000 // ISO_BINS
-    scored = _scored_labeled(t)
-    stats = scored.groupBy(
-        F.least(F.floor(F.col("score_q") / F.lit(width)), F.lit(ISO_BINS - 1))
-        .cast("long")
-        .alias("bin")
-    ).agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("label").alias("pos"),
-        F.sum(dec38(F.col("score_q"))).alias("ssum"),
-    )
-    stats = stats.localCheckpoint(eager=True)
-    fit = _iso_fit(stats.select("bin", "n", "pos"))
-    blocks = (
-        fit.join(stats.select("bin", "ssum"), "bin")
-        .groupBy("v")
-        .agg(
-            F.sum(dec38(F.col("n"))).alias("n_b"),
-            F.sum(dec38(F.col("pos"))).alias("pos_b"),
-            F.sum(F.col("ssum")).alias("ssum_b"),
-        )
-    )
-    m6 = F.lit(1_000_000).cast("decimal(38,0)")
-    c100 = F.lit(100).cast("decimal(38,0)")
-    fitted = halfup_div(m6 * F.col("pos_b"), F.col("n_b"))
-    mean_s = halfup_div(c100 * F.col("ssum_b"), F.col("n_b"))
-    return (
-        blocks.select(
-            fitted.cast("long").alias("fitted_micro"),
-            F.col("n_b").cast("long").alias("n_b"),
-            F.col("pos_b").cast("long").alias("pos_b"),
-            mean_s.cast("long").alias("mean_score_micro"),
-            (mean_s - fitted).cast("long").alias("gap_micro"),
-        )
-        .orderBy("fitted_micro")
-    )
 
 # ---------------------------------------------------------------------------
 # 5. Chao-Shen coverage-adjusted entropy (+ plug-in, Miller-Madow)

@@ -27,6 +27,10 @@ registry inventory before design (the SCALE §5j.7 authoring rule):
 Reference parity note: the reference (Go ingestion pipeline,
 ``/root/reference/main.go``) has no analytics; these extend SURVEY
 §2.C ML / privacy / embedding compression.
+
+``ml_partial_auc_mcclish`` lives in ``operators/ml_ranking.py``;
+``ml_cost_curve_envelope`` and ``ml_equal_error_rate`` live in
+``operators/ml_thresholds.py`` with the other ml queries.
 """
 
 from __future__ import annotations
@@ -37,402 +41,6 @@ from pyspark.sql import functions as F
 from ..functions.exact import dec38, halfup_div, sql_halfup_div
 from ..registry import register
 from ..tables import Tables
-
-# ---------------------------------------------------------------------------
-# shared: the (v desc, n_sel, tp) ROC cumulative with totals
-# ---------------------------------------------------------------------------
-
-
-def _sql_roc_cum() -> str:
-    """grid/tot/cum CTEs — the ml_recall_at_precision_floor ROC
-    cumulative (re-stated per-op by that family's convention)."""
-    return """
-    grid AS (
-      SELECT score_q, CAST(count(*) AS BIGINT) AS n,
-             CAST(sum(label) AS BIGINT) AS pos
-      FROM scored GROUP BY score_q
-    ), tot AS (
-      SELECT CAST(sum(n) AS BIGINT) AS nn, CAST(sum(pos) AS BIGINT) AS p
-      FROM grid
-    ), cum AS (
-      SELECT score_q AS v,
-             sum(n) OVER (ORDER BY score_q DESC
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS n_sel,
-             sum(pos) OVER (ORDER BY score_q DESC
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS tp
-      FROM grid
-    )
-"""
-
-
-def _roc_cum(t: Tables):
-    from pyspark.sql.window import Window
-
-    from .ml import _scored_labeled
-
-    grid = _scored_labeled(t).groupBy("score_q").agg(
-        F.count(F.lit(1)).alias("n"), F.sum("label").alias("pos")
-    )
-    tot = grid.agg(
-        F.sum("n").cast("long").alias("nn"), F.sum("pos").cast("long").alias("p")
-    )
-    w = Window.orderBy(F.col("score_q").desc()).rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    cum = grid.select(
-        F.col("score_q").alias("v"),
-        F.sum("n").over(w).cast("long").alias("n_sel"),
-        F.sum("pos").over(w).cast("long").alias("tp"),
-    )
-    return cum, tot
-
-
-# ---------------------------------------------------------------------------
-# 1. Partial AUC (FPR <= 1/10) with McClish standardization
-# ---------------------------------------------------------------------------
-
-PAUC_B_NUM, PAUC_B_DEN = 1, 10  # FPR band [0, 0.1]
-
-
-def _pauc_oracle() -> str:
-    from .ml import _scored_labeled_sql
-
-    b = f"({PAUC_B_NUM}.0::DOUBLE / {PAUC_B_DEN}.0::DOUBLE)"
-    return (
-        _scored_labeled_sql()
-        + ", "
-        + _sql_roc_cum().strip()
-        + f"""
-    , pts AS (
-      SELECT v,
-             CAST(n_sel - tp AS DOUBLE) / CAST((SELECT nn - p FROM tot) AS DOUBLE)
-               AS x,
-             CAST(tp AS DOUBLE) / CAST((SELECT p FROM tot) AS DOUBLE) AS y
-      FROM cum
-    ), segs AS (
-      SELECT coalesce(lag(x) OVER (ORDER BY v DESC), 0.0::DOUBLE) AS x1,
-             coalesce(lag(y) OVER (ORDER BY v DESC), 0.0::DOUBLE) AS y1,
-             x AS x2, y AS y2
-      FROM pts
-    ), contrib AS (
-      SELECT CASE
-        WHEN x2 <= {b} THEN (x2 - x1) * (y1 + y2) * 0.5::DOUBLE
-        WHEN x1 < {b} THEN
-          ({b} - x1)
-          * (y1 + (y1 + (y2 - y1) * (({b} - x1) / (x2 - x1)))) * 0.5::DOUBLE
-        ELSE 0.0::DOUBLE END AS a
-      FROM segs WHERE x2 > x1
-    ), area AS (
-      SELECT sum(CAST(floor(a * 1000000000000.0::DOUBLE + 0.5) AS BIGINT)) AS a_pico
-      FROM contrib
-    )
-    SELECT CAST((SELECT nn FROM tot) AS BIGINT) AS n_docs,
-           CAST((SELECT p FROM tot) AS BIGINT) AS n_pos,
-           CAST(a_pico AS BIGINT) AS pauc_pico,
-           CAST(floor(
-             (0.5::DOUBLE * (1.0::DOUBLE
-               + ((CAST(a_pico AS DOUBLE) / 1000000000000.0::DOUBLE
-                   - {b} * {b} * 0.5::DOUBLE)
-                  / ({b} - {b} * {b} * 0.5::DOUBLE))))
-             * 1000000.0::DOUBLE + 0.5) AS BIGINT) AS pauc_mcclish_micro
-    FROM area
-    """
-    )
-
-
-@register("ml_partial_auc_mcclish", oracle=_pauc_oracle())
-def ml_partial_auc_mcclish(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Partial AUC restricted to the deployable low-false-positive
-    band FPR in [0, 0.1], with the McClish (1989) standardization
-    0.5 (1 + (A - A_min)/(A_max - A_min)) so the number reads like a
-    full AUC (0.5 = chance, 1 = perfect IN THE BAND). Global AUC
-    (``ml_auc_by_lang``) credits ranking skill at operating points a
-    production filter will never use; when the alert budget caps FPR
-    at 10%, THIS is the discrimination that matters, and two models
-    with equal AUC routinely swap order under it.
-
-    Exactness: the ROC polyline vertices are exact integer rationals
-    off the shared descending score-grid cumulative; each trapezoid
-    (and the single interpolated boundary segment) evaluates as a
-    mirrored IEEE double expression and quantizes to pico-area units
-    BEFORE the order-independent integer sum; the standardization is
-    one further mirrored expression, quantized at micro.
-
-    Scale shape: one scored scan to the <= 10001-value grid; the
-    cumulative and its lag are the fbeta/Youden allowlist class
-    (entry landed in this same commit). 1 row out.
-    """
-    from pyspark.sql.window import Window
-
-    t = Tables(spark, sf_dir)
-    cum, tot = _roc_cum(t)
-    b = float(PAUC_B_NUM) / float(PAUC_B_DEN)
-    pts = cum.crossJoin(F.broadcast(tot)).select(
-        "v",
-        ((F.col("n_sel") - F.col("tp")).cast("double")
-         / (F.col("nn") - F.col("p")).cast("double")).alias("x"),
-        (F.col("tp").cast("double") / F.col("p").cast("double")).alias("y"),
-    )
-    wlag = Window.orderBy(F.col("v").desc())
-    segs = pts.select(
-        F.coalesce(F.lag("x").over(wlag), F.lit(0.0)).alias("x1"),
-        F.coalesce(F.lag("y").over(wlag), F.lit(0.0)).alias("y1"),
-        F.col("x").alias("x2"),
-        F.col("y").alias("y2"),
-    ).where(F.col("x2") > F.col("x1"))
-    bl = F.lit(b)
-    yb = F.col("y1") + (F.col("y2") - F.col("y1")) * (
-        (bl - F.col("x1")) / (F.col("x2") - F.col("x1"))
-    )
-    a = (
-        F.when(
-            F.col("x2") <= bl,
-            (F.col("x2") - F.col("x1")) * (F.col("y1") + F.col("y2")) * F.lit(0.5),
-        )
-        .when(
-            F.col("x1") < bl,
-            (bl - F.col("x1")) * (F.col("y1") + yb) * F.lit(0.5),
-        )
-        .otherwise(F.lit(0.0))
-    )
-    area = segs.agg(
-        F.sum(F.floor(a * F.lit(1e12) + F.lit(0.5)).cast("long")).alias("a_pico")
-    )
-    std = F.lit(0.5) * (
-        F.lit(1.0)
-        + (
-            (F.col("a_pico").cast("double") / F.lit(1e12) - F.lit(b * b * 0.5))
-            / (F.lit(b) - F.lit(b * b * 0.5))
-        )
-    )
-    return area.crossJoin(F.broadcast(tot)).select(
-        F.col("nn").alias("n_docs"),
-        F.col("p").alias("n_pos"),
-        F.col("a_pico").alias("pauc_pico"),
-        F.floor(std * F.lit(1e6) + F.lit(0.5)).cast("long").alias(
-            "pauc_mcclish_micro"
-        ),
-    )
-
-
-# ---------------------------------------------------------------------------
-# 2. Equal error rate with exact bracketing
-# ---------------------------------------------------------------------------
-
-
-def _eer_oracle() -> str:
-    from .ml import _scored_labeled_sql
-
-    return (
-        _scored_labeled_sql()
-        + ", "
-        + _sql_roc_cum().strip()
-        + """
-    , pts AS (
-      SELECT v, n_sel, tp,
-             CAST(n_sel - tp AS DOUBLE) / CAST((SELECT nn - p FROM tot) AS DOUBLE)
-               AS fpr,
-             1.0::DOUBLE - CAST(tp AS DOUBLE) / CAST((SELECT p FROM tot) AS DOUBLE)
-               AS fnr
-      FROM cum
-    ), lagged AS (
-      SELECT v,
-             coalesce(lag(fpr) OVER (ORDER BY v DESC), 0.0::DOUBLE) AS fpr1,
-             coalesce(lag(fnr) OVER (ORDER BY v DESC), 1.0::DOUBLE) AS fnr1,
-             fpr AS fpr2, fnr AS fnr2,
-             row_number() OVER (ORDER BY v DESC) AS rn
-      FROM pts
-    ), cross_ AS (
-      SELECT *, row_number() OVER (ORDER BY rn) AS pick
-      FROM lagged WHERE fpr2 >= fnr2
-    ), sel AS (
-      SELECT * FROM cross_ WHERE pick = 1
-    )
-    SELECT CAST(v AS BIGINT) AS crossing_threshold_q,
-           CAST(floor(fpr1 * 1000000.0::DOUBLE + 0.5) AS BIGINT) AS fpr_before_micro,
-           CAST(floor(fnr1 * 1000000.0::DOUBLE + 0.5) AS BIGINT) AS fnr_before_micro,
-           CAST(floor(fpr2 * 1000000.0::DOUBLE + 0.5) AS BIGINT) AS fpr_after_micro,
-           CAST(floor(fnr2 * 1000000.0::DOUBLE + 0.5) AS BIGINT) AS fnr_after_micro,
-           CAST(floor(
-             (CASE WHEN (fpr2 - fpr1) + (fnr1 - fnr2) > 0.0::DOUBLE THEN
-               fpr1 + (fpr2 - fpr1)
-                 * ((fnr1 - fpr1) / ((fpr2 - fpr1) + (fnr1 - fnr2)))
-             ELSE fpr2 END) * 1000000.0::DOUBLE + 0.5) AS BIGINT) AS eer_micro
-    FROM sel
-    """
-    )
-
-
-@register("ml_equal_error_rate", oracle=_eer_oracle())
-def ml_equal_error_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Equal error rate of the classifier against the rule gate: the
-    operating point where false-positive and false-negative rates
-    cross — biometrics' and speaker-verification's single-number
-    summary, and the threshold-free twin of
-    ``ml_youden_optimal_threshold`` (Youden maximizes TPR - FPR; EER
-    balances the two error types exactly). Reported with the exact
-    bracketing pair (the last grid point before the crossing and the
-    first after) plus the linear interpolation between them, so the
-    consumer sees both the achievable operating points and the
-    idealized rate.
-
-    Exactness: the crossing row is picked by the EXACT integer
-    condition fp * P >= (P - tp) * N lifted to the doubles only for
-    the reported rates; bracketing rates and the interpolated EER are
-    mirrored IEEE double expressions off the exact cumulative
-    integers, quantized once at micro (degenerate vertical crossings
-    fall back to the after-point rate).
-
-    Scale shape: one scored scan to the <= 10001-value grid; the
-    cumulative, lag and first-crossing pick are the fbeta/Youden
-    allowlist class (entry landed in this same commit). 1 row out.
-    """
-    from pyspark.sql.window import Window
-
-    t = Tables(spark, sf_dir)
-    cum, tot = _roc_cum(t)
-    pts = cum.crossJoin(F.broadcast(tot)).select(
-        "v",
-        "n_sel",
-        "tp",
-        ((F.col("n_sel") - F.col("tp")).cast("double")
-         / (F.col("nn") - F.col("p")).cast("double")).alias("fpr"),
-        (F.lit(1.0) - F.col("tp").cast("double") / F.col("p").cast("double")).alias(
-            "fnr"
-        ),
-    )
-    wlag = Window.orderBy(F.col("v").desc())
-    lagged = pts.select(
-        "v",
-        F.coalesce(F.lag("fpr").over(wlag), F.lit(0.0)).alias("fpr1"),
-        F.coalesce(F.lag("fnr").over(wlag), F.lit(1.0)).alias("fnr1"),
-        F.col("fpr").alias("fpr2"),
-        F.col("fnr").alias("fnr2"),
-        F.row_number().over(wlag).alias("rn"),
-    )
-    wpick = Window.orderBy("rn")
-    sel = (
-        lagged.where(F.col("fpr2") >= F.col("fnr2"))
-        .withColumn("pick", F.row_number().over(wpick))
-        .where(F.col("pick") == 1)
-    )
-    den = (F.col("fpr2") - F.col("fpr1")) + (F.col("fnr1") - F.col("fnr2"))
-    eer = F.when(
-        den > 0.0,
-        F.col("fpr1")
-        + (F.col("fpr2") - F.col("fpr1"))
-        * ((F.col("fnr1") - F.col("fpr1")) / den),
-    ).otherwise(F.col("fpr2"))
-    q6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)).cast("long")  # noqa: E731
-    return sel.select(
-        F.col("v").cast("long").alias("crossing_threshold_q"),
-        q6(F.col("fpr1")).alias("fpr_before_micro"),
-        q6(F.col("fnr1")).alias("fnr_before_micro"),
-        q6(F.col("fpr2")).alias("fpr_after_micro"),
-        q6(F.col("fnr2")).alias("fnr_after_micro"),
-        q6(eer).alias("eer_micro"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# 3. Cost-curve lower envelope over the probability-cost grid
-# ---------------------------------------------------------------------------
-
-COST_PC_DEN = 20  # pc grid i/20, i = 1..19
-
-
-def _cost_env_oracle() -> str:
-    from .ml import _scored_labeled_sql
-
-    hd = sql_halfup_div
-    return (
-        _scored_labeled_sql()
-        + ", "
-        + _sql_roc_cum().strip()
-        + f"""
-    , cum0 AS (
-      SELECT n_sel, tp FROM cum
-      UNION ALL SELECT 0 AS n_sel, 0 AS tp
-    ), pcs AS (
-      SELECT unnest(range(1, {COST_PC_DEN})) AS i
-    ), nec AS (
-      SELECT p.i,
-             {hd(f'1000000::HUGEINT * (p.i * (t.p - c.tp) * (t.nn - t.p)'
-                 f' + ({COST_PC_DEN} - p.i) * (c.n_sel - c.tp) * t.p)',
-                 f'{COST_PC_DEN}::HUGEINT * t.p * (t.nn - t.p)')} AS nec_micro
-      FROM pcs p, cum0 c, tot t
-    ), env AS (
-      SELECT i, CAST(min(nec_micro) AS BIGINT) AS envelope_micro
-      FROM nec GROUP BY i
-    )
-    SELECT CAST(i AS BIGINT) AS pc_num,
-           CAST({COST_PC_DEN} AS BIGINT) AS pc_den,
-           envelope_micro,
-           CAST({hd(f'1000000::HUGEINT * least(i, {COST_PC_DEN} - i)',
-                    str(COST_PC_DEN))} AS BIGINT) AS trivial_micro,
-           CAST({hd(f'1000000::HUGEINT * least(i, {COST_PC_DEN} - i)',
-                    str(COST_PC_DEN))} - envelope_micro AS BIGINT)
-             AS gain_micro
-    FROM env ORDER BY pc_num
-    """
-    )
-
-
-@register("ml_cost_curve_envelope", oracle=_cost_env_oracle())
-def ml_cost_curve_envelope(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cost-curve lower envelope (Drummond & Holte 2006): for each
-    probability-cost operating condition pc on a 19-point grid, the
-    minimum achievable normalized expected cost
-    NEC(t; pc) = pc * FNR(t) + (1 - pc) * FPR(t) over every score
-    threshold, beside the trivial-classifier cost min(pc, 1 - pc) and
-    the gain over it. The ROC convex hull (``ml_roc_convex_hull``)
-    shows WHICH thresholds are ever optimal; the cost envelope shows
-    HOW MUCH each deployment condition saves — the view that answers
-    "is this model worth deploying at MY class ratio" directly.
-
-    Exactness: every NEC value is ONE half-up micro division of exact
-    integer cross-products (i (P - tp) N + (20 - i) fp P over 20 P N)
-    including the virtual reject-all row; the per-condition envelope
-    is an integer MIN; trivial cost and gain are exact micro
-    arithmetic.
-
-    Scale shape: one scored scan to the <= 10001-value grid; the
-    cumulative is the fbeta/Youden allowlist class (entry landed in
-    this same commit); the pc fan is a broadcast 19-row cross of the
-    bounded grid. 19 rows out.
-    """
-    t = Tables(spark, sf_dir)
-    cum, tot = _roc_cum(t)
-    cum0 = cum.select("n_sel", "tp").unionByName(
-        cum.sparkSession.createDataFrame([(0, 0)], "n_sel long, tp long")
-    )
-    pcs = cum.sparkSession.range(1, COST_PC_DEN).select(
-        F.col("id").cast("long").alias("i")
-    )
-    j = cum0.crossJoin(F.broadcast(pcs)).crossJoin(F.broadcast(tot))
-    m6 = F.lit(1_000_000).cast("decimal(38,0)")
-    nden = F.lit(COST_PC_DEN).cast("decimal(38,0)") * dec38(F.col("p")) * dec38(
-        F.col("nn") - F.col("p")
-    )
-    nnum = m6 * (
-        dec38(F.col("i")) * dec38(F.col("p") - F.col("tp")) * dec38(F.col("nn") - F.col("p"))
-        + dec38(F.lit(COST_PC_DEN) - F.col("i"))
-        * dec38(F.col("n_sel") - F.col("tp"))
-        * dec38(F.col("p"))
-    )
-    nec = j.select("i", halfup_div(nnum, nden).cast("long").alias("nec_micro"))
-    env = nec.groupBy("i").agg(F.min("nec_micro").alias("envelope_micro"))
-    triv = halfup_div(
-        m6 * dec38(F.least(F.col("i"), F.lit(COST_PC_DEN) - F.col("i"))),
-        F.lit(COST_PC_DEN).cast("decimal(38,0)"),
-    ).cast("long")
-    return env.select(
-        F.col("i").alias("pc_num"),
-        F.lit(COST_PC_DEN).cast("long").alias("pc_den"),
-        "envelope_micro",
-        triv.alias("trivial_micro"),
-        (triv - F.col("envelope_micro")).alias("gain_micro"),
-    ).orderBy("pc_num")
 
 # ---------------------------------------------------------------------------
 # 4. beta-likeness attribute-disclosure audit

@@ -24,6 +24,11 @@ with the other daily-series queries.
 
 ``events_dau_mau_stickiness`` and ``events_retention_decay_fit`` live in
 ``operators/events_users.py`` with the other events queries.
+
+``ml_brier_decomposition`` and ``ml_expected_calibration_error`` live in
+``operators/ml_calibration.py``; ``ml_auc_jackknife_ci`` lives in
+``operators/ml_ranking.py``; ``ml_youden_optimal_threshold`` lives in
+``operators/ml_thresholds.py`` with the other ml queries.
 """
 
 from __future__ import annotations
@@ -338,320 +343,6 @@ def privacy_generalization_ladder(spark: SparkSession, sf_dir: str) -> DataFrame
 
 
 # ---------------------------------------------------------------------------
-# 7. Murphy decomposition of the Brier score (reliability / resolution /
-#    uncertainty) over the classifier deciles
-# ---------------------------------------------------------------------------
-
-BRIER_SCALE = 10_000  # score_q unit (1e-4 score quantization)
-
-
-def _brier_decomp_oracle() -> str:
-    from .ml import _scored_labeled_sql
-    from ..functions.exact import sql_round_big_int_ratio
-
-    s = BRIER_SCALE
-    return (
-        _scored_labeled_sql()
-        + f"""
-    , bins AS (
-      SELECT CAST(least(score_q // 1000, 9) AS BIGINT) AS decile,
-             CAST(count(*) AS BIGINT) AS n_k,
-             CAST(sum(label) AS BIGINT) AS pos_k,
-             CAST(sum(score_q) AS BIGINT) AS sum_q_k,
-             CAST(sum((score_q - {s} * label)::HUGEINT
-                      * (score_q - {s} * label)) AS HUGEINT) AS sq_err_k
-      FROM scored GROUP BY 1
-    ), tot AS (
-      SELECT CAST(sum(n_k) AS BIGINT) AS n,
-             CAST(sum(pos_k) AS BIGINT) AS pos,
-             CAST(sum(sq_err_k) AS HUGEINT) AS sq_err
-      FROM bins
-    ), terms AS (
-      SELECT b.*, t.n, t.pos, t.sq_err,
-             (2 * ((b.sum_q_k - {s} * b.pos_k)::HUGEINT
-                   * (b.sum_q_k - {s} * b.pos_k) * 1000000000) + b.n_k)
-               // (2::HUGEINT * b.n_k) AS rel_u,
-             (2 * ((b.pos_k::HUGEINT * t.n - t.pos::HUGEINT * b.n_k)
-                   * (b.pos_k::HUGEINT * t.n - t.pos::HUGEINT * b.n_k)
-                   * 1000000000) + b.n_k) // (2::HUGEINT * b.n_k) AS res_u
-      FROM bins b, tot t
-    )
-    SELECT CAST(max(n) AS BIGINT) AS n,
-           CAST(max(pos) AS BIGINT) AS n_pos,
-           {sql_round_big_int_ratio(
-               'max(sq_err)', f'max(n)::HUGEINT * {s} * {s}', 9)} AS brier,
-           {sql_round_big_int_ratio(
-               'sum(rel_u)',
-               f'max(n)::HUGEINT * {s} * {s} * 1000000000', 9)} AS reliability,
-           {sql_round_big_int_ratio(
-               'sum(res_u)',
-               'max(n)::HUGEINT * max(n) * max(n) * 1000000000', 9)} AS resolution,
-           {sql_round_big_int_ratio(
-               'max(pos)::HUGEINT * (max(n) - max(pos))',
-               'max(n)::HUGEINT * max(n)', 9)} AS uncertainty
-    FROM terms
-    """
-    )
-
-
-@register("ml_brier_decomposition", oracle=_brier_decomp_oracle())
-def ml_brier_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Murphy decomposition of the quality classifier's Brier score
-    over its 10 calibration deciles: BS alongside reliability
-    (calibration error — how far bin-mean forecasts sit from bin
-    event rates; lower is better), resolution (how much the bins
-    separate the base rate; higher is better) and uncertainty (the
-    irreducible o(1-o)) — the canonical diagnosis of WHY a Brier
-    score is what it is, on top of the raw score
-    (``ml_brier_score_by_lang``) and the reliability diagram
-    (``ml_calibration_curve``). BS ≈ REL - RES + UNC up to the
-    within-bin forecast-variance/covariance terms (non-constant
-    forecasts inside a decile); the replica test pins the exact
-    residual.
-
-    All four values are exact decimal ratios of integer sufficient
-    statistics from ONE document scan + a 10-key aggregate: squared
-    errors on the 1e-4 score grid, per-bin REL/RES numerators
-    quantized half-up 1e-9 per bin (deterministic in both engines),
-    one ratio each at the end. Shuffle volume: 10 rows.
-    """
-    from .ml import _scored_labeled
-    from ..functions.exact import round_big_int_ratio
-
-    s = BRIER_SCALE
-    t = Tables(spark, sf_dir)
-    sc = _scored_labeled(t)
-    err = F.col("score_q") - s * F.col("label")
-    bins = sc.groupBy(
-        F.least(F.floor(F.col("score_q") / F.lit(1000)), F.lit(9)).cast("long").alias("decile")
-    ).agg(
-        F.count(F.lit(1)).alias("n_k"),
-        F.sum("label").alias("pos_k"),
-        F.sum("score_q").alias("sum_q_k"),
-        F.sum(dec38(err) * err).alias("sq_err_k"),
-    )
-    w_all = Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    withtot = bins.select(
-        "*",
-        F.sum("n_k").over(w_all).alias("n"),
-        F.sum("pos_k").over(w_all).alias("pos"),
-        F.sum("sq_err_k").over(w_all).alias("sq_err"),
-    )
-    rel_num = dec38(F.col("sum_q_k") - s * F.col("pos_k"))
-    rel_a = F.lit(2).cast("decimal(38,0)") * (rel_num * rel_num * F.lit(10**9)) + F.col("n_k")
-    rel_b = F.lit(2).cast("decimal(38,0)") * F.col("n_k")
-    res_num = dec38(F.col("pos_k")) * F.col("n") - dec38(F.col("pos")) * F.col("n_k")
-    res_a = F.lit(2).cast("decimal(38,0)") * (res_num * res_num * F.lit(10**9)) + F.col("n_k")
-    res_b = rel_b
-    terms = withtot.select(
-        "n",
-        "pos",
-        "sq_err",
-        ((rel_a - rel_a % rel_b) / rel_b).cast("decimal(38,0)").alias("rel_u"),
-        ((res_a - res_a % res_b) / res_b).cast("decimal(38,0)").alias("res_u"),
-    )
-    agg = terms.agg(
-        F.max("n").alias("n"),
-        F.max("pos").alias("pos"),
-        F.max("sq_err").alias("sq_err"),
-        F.sum("rel_u").alias("sum_rel_u"),
-        F.sum("res_u").alias("sum_res_u"),
-    )
-    return agg.select(
-        F.col("n"),
-        F.col("pos").alias("n_pos"),
-        round_big_int_ratio(F.col("sq_err"), dec38(F.col("n")) * F.lit(s * s), 9).alias(
-            "brier"
-        ),
-        round_big_int_ratio(
-            F.col("sum_rel_u"), dec38(F.col("n")) * F.lit(s * s) * F.lit(10**9), 9
-        ).alias("reliability"),
-        round_big_int_ratio(
-            F.col("sum_res_u"),
-            dec38(F.col("n")) * F.col("n") * F.col("n") * F.lit(10**9),
-            9,
-        ).alias("resolution"),
-        round_big_int_ratio(
-            dec38(F.col("pos")) * (F.col("n") - F.col("pos")),
-            dec38(F.col("n")) * F.col("n"),
-            9,
-        ).alias("uncertainty"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# 9. Jackknife CI on the classifier AUC (leave-one-bucket-out)
-# ---------------------------------------------------------------------------
-
-AUC_JK_BUCKETS = 10
-
-
-def _auc_jackknife_oracle() -> str:
-    from .ml import _scored_labeled_sql
-    from ..functions.exact import sql_round_big_int_ratio
-
-    b = AUC_JK_BUCKETS
-    return (
-        _scored_labeled_sql()
-        + f"""
-    , bv AS (
-      SELECT score_q,
-             CAST((('0x' || substr(sha256(CAST(doc_id AS VARCHAR)), 1, 15)))::BIGINT
-               % {b} AS BIGINT) AS bucket,
-             CAST(count(*) AS BIGINT) AS cnt,
-             CAST(sum(label) AS BIGINT) AS cpos
-      FROM scored GROUP BY 1, 2
-    ), buckets AS (SELECT unnest(range(0, {b})) AS bucket),
-    tot AS (
-      SELECT score_q, CAST(sum(cnt) AS BIGINT) AS cnt_t,
-             CAST(sum(cpos) AS BIGINT) AS cpos_t
-      FROM bv GROUP BY score_q
-    ), excl AS (
-      SELECT bk.bucket, t.score_q,
-             t.cnt_t - coalesce(v.cnt, 0) AS cnt,
-             t.cpos_t - coalesce(v.cpos, 0) AS cpos
-      FROM buckets bk CROSS JOIN tot t
-      LEFT JOIN bv v ON v.bucket = bk.bucket AND v.score_q = t.score_q
-    ), ranked AS (
-      SELECT bucket, cnt, cpos,
-             coalesce(sum(cnt) OVER (PARTITION BY bucket ORDER BY score_q
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cum
-      FROM excl
-    ), per_b AS (
-      SELECT bucket,
-             CAST(sum(cpos) AS BIGINT) AS n_pos,
-             CAST(sum(cnt - cpos) AS BIGINT) AS n_neg,
-             CAST(sum(cpos * (2 * cum + cnt + 1)) AS HUGEINT) AS r2
-      FROM ranked GROUP BY bucket
-    ), theta AS (
-      SELECT bucket,
-             CAST((2 * ((r2 - n_pos::HUGEINT * (n_pos + 1)) * 1000000000)
-                   + 2::HUGEINT * n_pos * n_neg)
-               // (2::HUGEINT * 2 * n_pos * n_neg) AS BIGINT) AS theta_u
-      FROM per_b WHERE n_pos > 0 AND n_neg > 0
-    ), s AS (
-      SELECT CAST(count(*) AS BIGINT) AS nb,
-             CAST(sum(theta_u) AS BIGINT) AS s1,
-             CAST(sum(theta_u::HUGEINT * theta_u) AS HUGEINT) AS s2
-      FROM theta
-    )
-    SELECT nb AS n_buckets,
-           {sql_round_big_int_ratio('s1', 'nb::HUGEINT * 1000000000', 9)}
-             AS auc_jackknife_mean,
-           CAST(floor(sqrt(
-             CAST((nb - 1) * (nb * s2 - s1::HUGEINT * s1) AS DOUBLE)
-             / (CAST(nb AS DOUBLE) * nb)) / 1000000000.0 * 1000000.0 + 0.5)
-             AS BIGINT) / 1000000.0 AS auc_se_jackknife
-    FROM s
-    """
-    )
-
-
-@register("ml_auc_jackknife_ci", oracle=_auc_jackknife_oracle())
-def ml_auc_jackknife_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Delete-one-group jackknife standard error on the classifier
-    AUC: documents hash deterministically into 10 buckets, theta_b =
-    AUC computed WITHOUT bucket b (exact doubled rank-sums on the
-    leave-out score-domain counts), and the jackknife mean/SE follow
-    from the 10 thetas — the error bar the point estimates
-    (``ml_auc_by_lang``) lack, RNG-free like the block-jackknife mean
-    CI (``stats_jackknife_mean_ci``).
-
-    The leave-out trick never rescans documents: one scan builds the
-    (score, bucket) count grid; each theta_b is the full-population
-    cumulative MINUS the bucket's own counts, an O(|domain| x 10)
-    bounded computation. Each theta quantizes half-up 1e-9, so the
-    jackknife moments are exact integer sums with one double sqrt at
-    the end.
-    """
-    from .ml import _scored_labeled
-    from ..functions.exact import round_big_int_ratio
-    from ..functions.textnorm import sha256_prefix_i64
-
-    b = AUC_JK_BUCKETS
-    t = Tables(spark, sf_dir)
-    sc = _scored_labeled(t).select(
-        "score_q",
-        "label",
-        (sha256_prefix_i64(F.col("doc_id").cast("string")) % b).alias("bucket"),
-    )
-    from ..functions.partitioning import iter_checkpoint
-
-    # the (score, bucket) grid is consumed twice (totals + the
-    # leave-out join); without a lineage cut the expensive per-token
-    # scoring scan upstream runs once per consumer (measured 6.9x at
-    # the x10 fixture). The grid itself is domain-bounded
-    # (<= 10001 scores x 10 buckets), so the cut is cheap.
-    bv = iter_checkpoint(
-        sc.groupBy("score_q", "bucket").agg(
-            F.count(F.lit(1)).alias("cnt"), F.sum("label").alias("cpos")
-        )
-    )
-    tot = bv.groupBy("score_q").agg(
-        F.sum("cnt").alias("cnt_t"), F.sum("cpos").alias("cpos_t")
-    )
-    buckets = spark.range(b).select(F.col("id").alias("bucket"))
-    excl = (
-        buckets.crossJoin(tot)
-        .join(bv, ["bucket", "score_q"], "left")
-        .select(
-            "bucket",
-            "score_q",
-            (F.col("cnt_t") - F.coalesce(F.col("cnt"), F.lit(0))).alias("cnt"),
-            (F.col("cpos_t") - F.coalesce(F.col("cpos"), F.lit(0))).alias("cpos"),
-        )
-    )
-    w_prev = (
-        Window.partitionBy("bucket")
-        .orderBy("score_q")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    ranked = excl.select(
-        "bucket",
-        "cnt",
-        "cpos",
-        F.coalesce(F.sum("cnt").over(w_prev), F.lit(0)).alias("cum"),
-    )
-    per_b = ranked.groupBy("bucket").agg(
-        F.sum("cpos").alias("n_pos"),
-        F.sum(F.col("cnt") - F.col("cpos")).alias("n_neg"),
-        F.sum(dec38(F.col("cpos")) * (2 * F.col("cum") + F.col("cnt") + 1)).alias("r2"),
-    )
-    th_num = (F.col("r2") - dec38(F.col("n_pos")) * (F.col("n_pos") + 1)) * F.lit(10**9)
-    th_den = F.lit(2).cast("decimal(38,0)") * F.col("n_pos") * F.col("n_neg")
-    th_a = F.lit(2).cast("decimal(38,0)") * th_num + th_den
-    th_b = F.lit(2).cast("decimal(38,0)") * th_den
-    # a leave-one-bucket-out sample with n_pos=0 or n_neg=0 (degenerate
-    # fuzz corpora) has no defined AUC: theta would be NULL on the
-    # Spark side (decimal div by zero) while nb still counted the row
-    # and the engines' div-by-zero semantics differ — drop degenerate
-    # buckets in BOTH engines instead (ADVICE r8).
-    theta = (
-        per_b.filter((F.col("n_pos") > 0) & (F.col("n_neg") > 0))
-        .select(((th_a - th_a % th_b) / th_b).cast("long").alias("theta_u"))
-    )
-    s = theta.agg(
-        F.count(F.lit(1)).alias("nb"),
-        F.sum("theta_u").alias("s1"),
-        F.sum(dec38(F.col("theta_u")) * F.col("theta_u")).alias("s2"),
-    )
-    nb = F.col("nb")
-    var_num = (
-        (dec38(nb) - 1) * (dec38(nb) * F.col("s2") - dec38(F.col("s1")) * F.col("s1"))
-    ).cast("double")
-    se = F.sqrt(var_num / (nb.cast("double") * nb)) / F.lit(1e9)
-    return s.select(
-        nb.alias("n_buckets"),
-        round_big_int_ratio(F.col("s1"), dec38(nb) * F.lit(10**9), 9).alias(
-            "auc_jackknife_mean"
-        ),
-        (F.floor(se * F.lit(1e6) + F.lit(0.5)).cast("long") / F.lit(1e6)).alias(
-            "auc_se_jackknife"
-        ),
-    )
-
-
-# ---------------------------------------------------------------------------
 # 13. Sentence-length profile per language
 # ---------------------------------------------------------------------------
 
@@ -884,197 +575,6 @@ def relational_skyline_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("max_size").alias("size"),
         )
         .orderBy("price", "partkey")
-    )
-
-
-# ---------------------------------------------------------------------------
-# 17. Expected / maximum calibration error over the classifier deciles
-# ---------------------------------------------------------------------------
-
-
-def _ece_oracle() -> str:
-    from .ml import _scored_labeled_sql
-    from ..functions.exact import sql_round_big_int_ratio, sql_round_int_ratio
-
-    s = 10_000
-    return (
-        _scored_labeled_sql()
-        + f"""
-    , bins AS (
-      SELECT CAST(least(score_q // 1000, 9) AS BIGINT) AS decile,
-             CAST(count(*) AS BIGINT) AS n_k,
-             CAST(sum(label) AS BIGINT) AS pos_k,
-             CAST(sum(score_q) AS BIGINT) AS sum_q_k
-      FROM scored GROUP BY 1
-    ), gaps AS (
-      SELECT decile, n_k,
-             abs(sum_q_k - {s} * pos_k) AS gap_u
-      FROM bins
-    )
-    SELECT CAST(sum(n_k) AS BIGINT) AS n,
-           CAST(count(*) AS BIGINT) AS n_bins,
-           {sql_round_big_int_ratio('sum(gap_u)', f'{s}::HUGEINT * sum(n_k)', 9)}
-             AS ece,
-           max({sql_round_int_ratio('gap_u', f'{s} * n_k', 9)}) AS mce
-    FROM gaps
-    """
-    )
-
-
-@register("ml_expected_calibration_error", oracle=_ece_oracle())
-def ml_expected_calibration_error(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Expected and maximum calibration error of the quality
-    classifier over its 10 score deciles: ECE = sum_k (n_k/N) *
-    |mean_score_k - frac_pos_k| (the headline number quoted for
-    forecast calibration) and MCE = the worst single bin — the scalar
-    summaries of the reliability diagram (``ml_calibration_curve``)
-    and the absolute-error sibling of the Brier reliability term.
-
-    The per-bin gap |sum_q_k - s*pos_k| is an exact integer on the
-    1e-4 score grid, so ECE reduces to ONE exact decimal ratio
-    sum(gap)/(s*N) with no per-bin division at all; MCE takes the max
-    of exact per-bin half-up ratios. One scan, 10-row aggregate.
-    """
-    from .ml import _scored_labeled
-    from ..functions.exact import round_big_int_ratio, round_int_ratio
-
-    s = 10_000
-    t = Tables(spark, sf_dir)
-    sc = _scored_labeled(t)
-    bins = sc.groupBy(
-        F.least(F.floor(F.col("score_q") / F.lit(1000)), F.lit(9)).cast("long").alias("decile")
-    ).agg(
-        F.count(F.lit(1)).alias("n_k"),
-        F.sum("label").alias("pos_k"),
-        F.sum("score_q").alias("sum_q_k"),
-    )
-    gaps = bins.select(
-        "n_k", F.abs(F.col("sum_q_k") - s * F.col("pos_k")).alias("gap_u")
-    )
-    return gaps.agg(
-        F.sum("n_k").alias("n"),
-        F.count(F.lit(1)).alias("n_bins"),
-        round_big_int_ratio(
-            F.sum("gap_u"), F.lit(s).cast("decimal(38,0)") * F.sum("n_k"), 9
-        ).alias("ece"),
-        F.max(round_int_ratio(F.col("gap_u"), F.lit(s) * F.col("n_k"), 9)).alias("mce"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# 18. Youden-J optimal threshold over the full score domain
-# ---------------------------------------------------------------------------
-
-
-def _youden_oracle() -> str:
-    from .ml import _scored_labeled_sql
-
-    return (
-        _scored_labeled_sql()
-        + """
-    , dv AS (
-      SELECT score_q, CAST(count(*) AS BIGINT) AS cnt,
-             CAST(sum(label) AS BIGINT) AS cpos
-      FROM scored GROUP BY score_q
-    ), cum AS (
-      SELECT score_q,
-             coalesce(sum(cpos) OVER (ORDER BY score_q
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS pos_lt,
-             coalesce(sum(cnt - cpos) OVER (ORDER BY score_q
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS neg_lt,
-             sum(cpos) OVER () AS n_pos,
-             sum(cnt - cpos) OVER () AS n_neg
-      FROM dv
-    ), j AS (
-      SELECT score_q AS threshold_q,
-             n_pos - pos_lt AS tp, n_neg - neg_lt AS fp,
-             pos_lt AS fn, neg_lt AS tn, n_pos, n_neg,
-             (2 * (n_pos - pos_lt) * 1000000000 + n_pos) // (2 * n_pos)
-               - (2 * (n_neg - neg_lt) * 1000000000 + n_neg) // (2 * n_neg)
-               AS j_u
-      FROM cum WHERE n_pos > 0 AND n_neg > 0
-    )
-    SELECT CAST(threshold_q AS BIGINT) AS threshold_q,
-           CAST(tp AS BIGINT) AS tp, CAST(fp AS BIGINT) AS fp,
-           CAST(fn AS BIGINT) AS fn, CAST(tn AS BIGINT) AS tn,
-           CAST((2 * tp * 1000000000 + n_pos) // (2 * n_pos) AS BIGINT)
-             / 1000000000.0 AS tpr,
-           CAST((2 * fp * 1000000000 + n_neg) // (2 * n_neg) AS BIGINT)
-             / 1000000000.0 AS fpr,
-           CAST(j_u AS BIGINT) / 1000000000.0 AS youden_j
-    FROM j
-    ORDER BY j_u DESC, threshold_q
-    LIMIT 1
-    """
-    )
-
-
-@register("ml_youden_optimal_threshold", oracle=_youden_oracle())
-def ml_youden_optimal_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Youden-J optimal operating point of the quality classifier:
-    sweep EVERY distinct score as the >=-threshold, J(t) = TPR - FPR,
-    return the maximizing threshold (ties -> smallest) with its full
-    confusion row — the operating-point selector the fixed-grid sweep
-    (``ml_confusion_threshold_sweep``) and the ranking metrics (AUC =
-    integral over all J) bracket but don't answer.
-
-    TPR/FPR per candidate threshold come from the same score-domain
-    cumulative the AUC uses (tp(t) = n_pos - pos_below), each
-    quantized half-up 1e-9 integers, so J and the argmax are
-    cross-engine exact; the argmax is a (J desc, threshold) top-1 on
-    the <= 10001-value domain, never a row-scaled sort.
-    """
-    from .ml import _scored_labeled
-
-    t = Tables(spark, sf_dir)
-    sc = _scored_labeled(t)
-    dv = sc.groupBy("score_q").agg(
-        F.count(F.lit(1)).alias("cnt"), F.sum("label").alias("cpos")
-    )
-    w_prev = Window.orderBy("score_q").rowsBetween(Window.unboundedPreceding, -1)
-    w_all = Window.orderBy("score_q").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    cum = dv.select(
-        "score_q",
-        F.coalesce(F.sum("cpos").over(w_prev), F.lit(0)).alias("pos_lt"),
-        F.coalesce(F.sum(F.col("cnt") - F.col("cpos")).over(w_prev), F.lit(0)).alias(
-            "neg_lt"
-        ),
-        F.sum("cpos").over(w_all).alias("n_pos"),
-        F.sum(F.col("cnt") - F.col("cpos")).over(w_all).alias("n_neg"),
-    )
-
-    def hup9(num, den):
-        return ((2 * num * F.lit(10**9) + den) - (2 * num * F.lit(10**9) + den) % (2 * den)) / (
-            2 * den
-        )
-
-    tp = F.col("n_pos") - F.col("pos_lt")
-    fp = F.col("n_neg") - F.col("neg_lt")
-    j = cum.filter((F.col("n_pos") > 0) & (F.col("n_neg") > 0)).select(
-        F.col("score_q").alias("threshold_q"),
-        tp.alias("tp"),
-        fp.alias("fp"),
-        F.col("pos_lt").alias("fn"),
-        F.col("neg_lt").alias("tn"),
-        hup9(tp, F.col("n_pos")).cast("long").alias("tpr_u"),
-        hup9(fp, F.col("n_neg")).cast("long").alias("fpr_u"),
-    )
-    j = j.withColumn("j_u", F.col("tpr_u") - F.col("fpr_u"))
-    return (
-        j.orderBy(F.col("j_u").desc(), "threshold_q")
-        .limit(1)
-        .select(
-            "threshold_q",
-            "tp",
-            "fp",
-            "fn",
-            "tn",
-            (F.col("tpr_u") / F.lit(1e9)).alias("tpr"),
-            (F.col("fpr_u") / F.lit(1e9)).alias("fpr"),
-            (F.col("j_u") / F.lit(1e9)).alias("youden_j"),
-        )
     )
 
 

@@ -29,6 +29,10 @@ neighborhoods) — never raw fact rows.
 
 ``events_sequential_patterns_topk`` lives in
 ``operators/events_sequence.py`` with the other events queries.
+
+``ml_uplift_by_engagement_tier`` lives in ``operators/ml_models.py``;
+``ml_precision_at_k_by_lang`` lives in ``operators/ml_ranking.py`` with
+the other ml queries.
 """
 
 from __future__ import annotations
@@ -261,92 +265,6 @@ def corpus_shard_skew_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         round_int_ratio(F.col("total_chars") * F.col("k"), F.col("t")).alias(
             "load_factor"
         ),
-    )
-
-
-# ---------------------------------------------------------------------------
-# 6. Precision@k / lift of the classifier ranking, per language
-# ---------------------------------------------------------------------------
-
-PAK_K = 20
-
-
-def _precision_at_k_oracle() -> str:
-    from .ml import _scored_labeled_sql
-    from ..functions.exact import sql_round_int_ratio
-
-    return (
-        _scored_labeled_sql()
-        + f"""
-    , ranked AS (
-      SELECT lang, label,
-             row_number() OVER (PARTITION BY lang
-                                ORDER BY score_q DESC, doc_id) AS rnk
-      FROM scored
-    ), per AS (
-      SELECT lang,
-             CAST(count(*) AS BIGINT) AS n,
-             CAST(sum(label) AS BIGINT) AS n_pos,
-             CAST(sum(CASE WHEN rnk <= {PAK_K} THEN label ELSE 0 END) AS BIGINT)
-               AS hits_at_k,
-             CAST(sum(CASE WHEN rnk <= {PAK_K} THEN 1 ELSE 0 END) AS BIGINT)
-               AS k_eff
-      FROM ranked GROUP BY lang
-    )
-    SELECT lang, n, n_pos, k_eff, hits_at_k,
-           {sql_round_int_ratio('hits_at_k', 'k_eff')} AS precision_at_k,
-           CASE WHEN n_pos > 0 THEN
-             {sql_round_int_ratio('hits_at_k * n', 'k_eff * n_pos')}
-           END AS lift_at_k
-    FROM per
-    """
-    )
-
-
-@register("ml_precision_at_k_by_lang", oracle=_precision_at_k_oracle())
-def ml_precision_at_k_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Precision@20 and lift@20 of the hashed-classifier ranking per
-    language: of each language's 20 highest-scored documents, the
-    fraction that pass the quality gate, and that precision relative
-    to the language's base rate — the RANKING-CUTOFF quality metrics
-    beside the threshold metrics (AUC/PR-AUC integrate over all
-    cutoffs; a selection pipeline ships exactly one k).
-
-    Reuses the single-scan ``_scored_labeled`` projection (scores and
-    labels from one token pass, no joins); the per-language ranking
-    partitions by lang (top-k never leaves its partition group);
-    precision and lift are exact integer ratios with the k_eff
-    denominator handling languages smaller than k. Deterministic
-    tiebreak (score desc, doc_id) in both engines.
-    """
-    from .ml import _scored_labeled
-    from ..functions.exact import round_int_ratio
-
-    t = Tables(spark, sf_dir)
-    sc = _scored_labeled(t)
-    w = Window.partitionBy("lang").orderBy(F.col("score_q").desc(), "doc_id")
-    ranked = sc.select("lang", "label", F.row_number().over(w).alias("rnk"))
-    per = ranked.groupBy("lang").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("label").alias("n_pos"),
-        F.sum(F.when(F.col("rnk") <= PAK_K, F.col("label")).otherwise(0)).alias(
-            "hits_at_k"
-        ),
-        F.sum(F.when(F.col("rnk") <= PAK_K, 1).otherwise(0)).alias("k_eff"),
-    )
-    return per.select(
-        "lang",
-        "n",
-        "n_pos",
-        "k_eff",
-        "hits_at_k",
-        round_int_ratio(F.col("hits_at_k"), F.col("k_eff")).alias("precision_at_k"),
-        F.when(
-            F.col("n_pos") > 0,
-            round_int_ratio(
-                F.col("hits_at_k") * F.col("n"), F.col("k_eff") * F.col("n_pos")
-            ),
-        ).alias("lift_at_k"),
     )
 
 
@@ -724,106 +642,6 @@ def corpus_split_balance_kl(spark: SparkSession, sf_dir: str) -> DataFrame:
         round_big_int_ratio(
             F.col("tsum"), dec38(F.col("np_")) * F.lit(1000000)
         ).alias("kl_vs_train"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# 16. Uplift (treatment - control conversion) by engagement tier
-# ---------------------------------------------------------------------------
-
-UPLIFT_MAX_TIER = 10
-
-
-def _uplift_oracle() -> str:
-    from ..functions.exact import sql_round_big_int_ratio
-
-    return f"""
-    WITH usr AS (
-      SELECT user_id,
-             (('0x' || substr(sha256(CAST(user_id AS VARCHAR)), 1, 15)))::BIGINT
-               % 2 AS treat,
-             CAST(sum(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS BIGINT)
-               AS n_views,
-             CAST(max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-               AS BIGINT) AS converted
-      FROM events GROUP BY user_id
-    ), tiered AS (
-      SELECT least(n_views, {UPLIFT_MAX_TIER}) AS tier, treat, converted FROM usr
-    ), cells AS (
-      SELECT CAST(tier AS BIGINT) AS tier,
-             CAST(sum(CASE WHEN treat = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_t,
-             CAST(sum(CASE WHEN treat = 1 THEN converted ELSE 0 END) AS BIGINT)
-               AS c_t,
-             CAST(sum(CASE WHEN treat = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_c,
-             CAST(sum(CASE WHEN treat = 0 THEN converted ELSE 0 END) AS BIGINT)
-               AS c_c
-      FROM tiered GROUP BY tier
-    )
-    SELECT tier, n_t, c_t, n_c, c_c,
-           CASE WHEN n_t > 0 AND n_c > 0 THEN
-             {sql_round_big_int_ratio(
-                 'c_t::HUGEINT * n_c - c_c::HUGEINT * n_t',
-                 'n_t::HUGEINT * n_c')}
-           END AS uplift
-    FROM cells ORDER BY tier
-    """
-
-
-@register("ml_uplift_by_engagement_tier", oracle=_uplift_oracle())
-def ml_uplift_by_engagement_tier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Uplift (treatment-minus-control conversion rate) by engagement
-    tier: users split 50/50 into treat/control by the portable user
-    hash, tiered by view count (capped at 10), conversion = any
-    purchase — the heterogeneous-treatment-effect read of the A/B
-    family (``stats_proportions_ztest`` answers "did the variant
-    lift conversion overall"; this answers "FOR WHOM", the question
-    targeting policies are built on — tiers rather than score
-    deciles so the cut needs no global sort, only a capped count).
-
-    One user-level aggregate off the event scan (partial-aggregated
-    groupBy), one 11-row tier reduce; the uplift difference of two
-    rates is computed as a SINGLE exact cross-multiplied big-integer
-    ratio (c_t*n_c - c_c*n_t)/(n_t*n_c), so no intermediate float
-    subtraction can diverge cross-engine; NULL where either arm is
-    empty in a tier.
-    """
-    from ..functions.exact import round_big_int_ratio
-    from ..functions.textnorm import sha256_prefix_i64
-
-    t = Tables(spark, sf_dir)
-    usr = t.events.groupBy("user_id").agg(
-        F.sum(F.when(F.col("event_type") == "view", 1).otherwise(0)).alias("n_views"),
-        F.max(F.when(F.col("event_type") == "purchase", 1).otherwise(0))
-        .cast("long")
-        .alias("converted"),
-    ).select(
-        (sha256_prefix_i64(F.col("user_id").cast("string")) % 2).alias("treat"),
-        F.least(F.col("n_views"), F.lit(UPLIFT_MAX_TIER)).alias("tier"),
-        "converted",
-    )
-    cells = usr.groupBy("tier").agg(
-        F.sum(F.when(F.col("treat") == 1, 1).otherwise(0)).alias("n_t"),
-        F.sum(F.when(F.col("treat") == 1, F.col("converted")).otherwise(0)).alias(
-            "c_t"
-        ),
-        F.sum(F.when(F.col("treat") == 0, 1).otherwise(0)).alias("n_c"),
-        F.sum(F.when(F.col("treat") == 0, F.col("converted")).otherwise(0)).alias(
-            "c_c"
-        ),
-    )
-    return cells.select(
-        "tier",
-        "n_t",
-        "c_t",
-        "n_c",
-        "c_c",
-        F.when(
-            (F.col("n_t") > 0) & (F.col("n_c") > 0),
-            round_big_int_ratio(
-                dec38(F.col("c_t")) * F.col("n_c") - dec38(F.col("c_c")) * F.col("n_t"),
-                dec38(F.col("n_t")) * F.col("n_c"),
-            ),
-        ).alias("uplift"),
     )
 
 

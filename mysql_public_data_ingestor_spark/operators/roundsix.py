@@ -18,6 +18,11 @@ Every operator is registered directly (@register).
 ``events_acf_daily_lags``, ``events_holt_linear_fit`` and
 ``events_poisson_rate_test`` live in ``operators/events_series.py`` with
 the other events queries.
+
+``ml_decision_stump`` and ``ml_naive_bayes_langid`` live in
+``operators/ml_models.py``; ``ml_ndcg_by_lang`` and
+``ml_pr_auc_by_lang`` live in ``operators/ml_ranking.py`` with the other
+ml queries.
 """
 
 from __future__ import annotations
@@ -26,7 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions.exact import dec38, order_cents
+from ..functions.exact import dec38
 from ..registry import register
 from ..tables import Tables
 
@@ -141,112 +146,6 @@ def privacy_t_closeness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             "meets_t"
         ),
     )
-
-
-# ---------------------------------------------------------------------------
-# 8. NDCG@10 ranking eval of the quality classifier
-# ---------------------------------------------------------------------------
-
-NDCG_K = 10
-# integer nano-gains 1e9/log2(i+1), precomputed in Python so BOTH
-# engines embed the identical int64 literals — no runtime log anywhere
-import math as _math  # noqa: E402
-
-NDCG_W = [int(_math.floor(1e9 / _math.log2(i + 1) + 0.5)) for i in range(1, NDCG_K + 1)]
-NDCG_PW = [sum(NDCG_W[: i + 1]) for i in range(NDCG_K)]  # prefix sums
-
-
-def _ndcg_oracle() -> str:
-    from .ml import _scored_labeled_sql
-
-    w_list = ", ".join(str(w) for w in NDCG_W)
-    pw_list = ", ".join(str(w) for w in NDCG_PW)
-    return (
-        _scored_labeled_sql()
-        + f"""
-    , ranked AS (
-      SELECT lang, label,
-             row_number() OVER (PARTITION BY lang
-                                ORDER BY score_q DESC, doc_id) AS rn
-      FROM scored
-    ), pos AS (
-      SELECT lang, CAST(sum(label) AS BIGINT) AS n_pos FROM scored GROUP BY lang
-    ), dcg AS (
-      SELECT lang,
-             CAST(sum(label * ([{w_list}])[CAST(rn AS INTEGER)]) AS BIGINT)
-               AS dcg_q
-      FROM ranked WHERE rn <= {NDCG_K} GROUP BY lang
-    ), j AS (
-      SELECT p.lang, p.n_pos, coalesce(d.dcg_q, 0) AS dcg_q,
-             CASE WHEN p.n_pos > 0 THEN
-               ([{pw_list}])[CAST(least(p.n_pos, {NDCG_K}) AS INTEGER)]
-             ELSE 0 END AS idcg_q
-      FROM pos p LEFT JOIN dcg d USING (lang)
-    )
-    SELECT lang, n_pos, dcg_q, CAST(idcg_q AS BIGINT) AS idcg_q,
-           CASE WHEN idcg_q > 0 THEN
-             CAST(((2000000::HUGEINT * dcg_q + idcg_q)
-                   // (2::HUGEINT * idcg_q)) AS BIGINT) / 1000000.0
-           END AS ndcg
-    FROM j
-    """
-    )
-
-
-@register("ml_ndcg_by_lang", oracle=_ndcg_oracle())
-def ml_ndcg_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """NDCG@10 of the hashed-feature quality classifier against the
-    rule-gate labels, per language — the RANKING eval completing the
-    classifier's scorecard (calibration = probability quality, AUC =
-    pairwise ordering, NDCG = top-of-list ordering, which is what a
-    "select the best documents" pipeline actually consumes).
-
-    Exactness: discount gains 1e9/log2(i+1) are PRECOMPUTED integer
-    literals (i <= 10), so DCG and ideal DCG are exact int64 sums and
-    NDCG is one decimal half-up ratio — no runtime logarithm at all.
-    Scale: one per-lang top-10 window over the single-scan scored
-    projection; everything after is |langs| rows.
-    """
-    from ..functions.exact import round_big_int_ratio
-    from .ml import _scored_labeled
-
-    t = Tables(spark, sf_dir)
-    s = _scored_labeled(t)
-    w = Window.partitionBy("lang").orderBy(F.col("score_q").desc(), "doc_id")
-    w_arr = F.array(*[F.lit(x).cast("long") for x in NDCG_W])
-    pw_arr = F.array(*[F.lit(x).cast("long") for x in NDCG_PW])
-    ranked = s.select("lang", "label", F.row_number().over(w).alias("rn"))
-    dcg = (
-        ranked.where(F.col("rn") <= NDCG_K)
-        .groupBy("lang")
-        .agg(F.sum(F.col("label") * F.element_at(w_arr, F.col("rn"))).alias("dcg_q"))
-    )
-    pos = s.groupBy("lang").agg(F.sum("label").alias("n_pos"))
-    j = pos.join(dcg, "lang", "left").select(
-        "lang",
-        "n_pos",
-        F.coalesce(F.col("dcg_q"), F.lit(0)).alias("dcg_q"),
-        F.when(
-            F.col("n_pos") > 0,
-            F.element_at(
-                pw_arr, F.least(F.col("n_pos"), F.lit(NDCG_K)).cast("int")
-            ),
-        )
-        .otherwise(0)
-        .alias("idcg_q"),
-    )
-    return j.select(
-        "lang",
-        "n_pos",
-        "dcg_q",
-        F.col("idcg_q").cast("long").alias("idcg_q"),
-        F.when(
-            F.col("idcg_q") > 0,
-            round_big_int_ratio(F.col("dcg_q"), F.col("idcg_q")),
-        ).alias("ndcg"),
-    )
-
-
 # ---------------------------------------------------------------------------
 # 9. Differentially-private counts via deterministic inverse-CDF Laplace
 # ---------------------------------------------------------------------------
@@ -468,463 +367,4 @@ def text_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_ranks",
         round_big_int_ratio(F.col("num"), F.col("denx")).alias("zipf_slope"),
         r2.alias("r_squared"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# 12. Average precision (PR-AUC) of the quality classifier
-# ---------------------------------------------------------------------------
-
-
-def _pr_auc_oracle() -> str:
-    from .ml import _scored_labeled_sql
-
-    return (
-        _scored_labeled_sql()
-        + """
-    , g AS (
-      SELECT lang, score_q,
-             CAST(count(*) AS BIGINT) AS cnt,
-             CAST(sum(label) AS BIGINT) AS pos
-      FROM scored GROUP BY lang, score_q
-    ), c AS (
-      SELECT lang, pos,
-             sum(cnt) OVER (PARTITION BY lang ORDER BY score_q DESC) AS n_incl,
-             sum(pos) OVER (PARTITION BY lang ORDER BY score_q DESC) AS tp_incl
-      FROM g
-    ), terms AS (
-      SELECT lang, pos,
-             CAST(((2000000000::HUGEINT * (pos::HUGEINT * tp_incl) + n_incl)
-                   // (2::HUGEINT * n_incl)) AS HUGEINT) AS term_q9
-      FROM c WHERE pos > 0
-    ), agg AS (
-      SELECT s.lang,
-             CAST(sum(s.label) AS BIGINT) AS n_pos,
-             CAST(count(*) - sum(s.label) AS BIGINT) AS n_neg
-      FROM scored s GROUP BY s.lang
-    ), ap AS (
-      SELECT lang, CAST(sum(term_q9) AS HUGEINT) AS sum_q9 FROM terms GROUP BY lang
-    )
-    SELECT a.lang, a.n_pos, a.n_neg,
-           CASE WHEN a.n_pos > 0 THEN
-             CAST(((2::HUGEINT * p.sum_q9 + a.n_pos)
-                   // (2::HUGEINT * a.n_pos)) AS BIGINT) / 1e9
-           END AS avg_precision
-    FROM agg a LEFT JOIN ap p USING (lang)
-    """
-    )
-
-
-@register("ml_pr_auc_by_lang", oracle=_pr_auc_oracle())
-def ml_pr_auc_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Average precision (area under the precision-recall curve, step
-    interpolation) of the quality classifier per language — the eval
-    that matters under class imbalance, where ROC-AUC
-    (``ml_auc_by_lang``) flatters: precision is recomputed at every
-    score cut, so a classifier that ranks a few negatives early is
-    punished immediately.
-
-    Definition (tie-aware, exact): scores collapse to their distinct
-    domain; at each score group, precision = tp_incl/n_incl at the
-    group's inclusive cumulative counts, weighted by the group's
-    positives. Each term quantizes half-up to nano-units in int128
-    BEFORE the sum (denominators vary per group — summing the exact
-    rationals would need unbounded precision), and AP is one final
-    half-up ratio by n_pos. Scale: identical shape to the AUC query —
-    a bounded per-lang window over the collapsed score domain.
-    """
-    from .ml import _scored_labeled
-
-    t = Tables(spark, sf_dir)
-    s = _scored_labeled(t)
-    g = s.groupBy("lang", "score_q").agg(
-        F.count(F.lit(1)).alias("cnt"), F.sum("label").alias("pos")
-    )
-    w = Window.partitionBy("lang").orderBy(F.col("score_q").desc())
-    c = g.select(
-        "lang",
-        "pos",
-        F.sum("cnt").over(w).alias("n_incl"),
-        F.sum("pos").over(w).alias("tp_incl"),
-    )
-    num = dec38(F.lit(2_000_000_000)) * (dec38(F.col("pos")) * dec38(F.col("tp_incl")))
-    den = dec38(F.col("n_incl"))
-    term_q9 = ((num + den - (num + den) % (F.lit(2).cast("decimal(38,0)") * den))
-               / (F.lit(2).cast("decimal(38,0)") * den)).cast("decimal(38,0)")
-    terms = c.where(F.col("pos") > 0).select("lang", term_q9.alias("term_q9"))
-    agg = s.groupBy("lang").agg(
-        F.sum("label").alias("n_pos"),
-        (F.count(F.lit(1)) - F.sum("label")).alias("n_neg"),
-    )
-    ap = terms.groupBy("lang").agg(F.sum("term_q9").alias("sum_q9"))
-    num2 = F.lit(2).cast("decimal(38,0)") * F.col("sum_q9") + dec38(F.col("n_pos"))
-    den2 = F.lit(2).cast("decimal(38,0)") * dec38(F.col("n_pos"))
-    return (
-        agg.join(ap, "lang", "left")
-        .select(
-            "lang",
-            "n_pos",
-            "n_neg",
-            F.when(
-                F.col("n_pos") > 0,
-                ((num2 - num2 % den2) / den2).cast("long") / F.lit(1e9),
-            ).alias("avg_precision"),
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
-# 13. Naive Bayes language classifier (train + score + confusion)
-# ---------------------------------------------------------------------------
-
-NB_HASH_A, NB_HASH_B = 214_013, 2_531_011
-NB_TEST_MOD = 5          # doc_id hash % 5 == 0 -> held-out test fold
-NB_MAX_CHARS = 400       # per-doc char cap bounds the bigram fanout
-
-
-def _nb_oracle() -> str:
-    from ..functions.detmath import sql_det_ln_steps
-
-    return f"""
-    WITH docs AS (
-      SELECT doc_id, lang,
-             substr(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), 1,
-                    {NB_MAX_CHARS}) AS norm,
-             ((((doc_id % {_P}) * {NB_HASH_A} + {NB_HASH_B}) % {_P})
-              % {NB_TEST_MOD} = 0) AS is_test
-      FROM documents
-    ), grams AS (
-      SELECT doc_id, lang, is_test, substr(norm, CAST(i AS INTEGER), 2) AS bg
-      FROM docs, unnest(generate_series(1, len(norm) - 1)) AS t(i)
-      WHERE len(norm) >= 2
-    ), model AS (
-      SELECT lang, bg, CAST(count(*) AS BIGINT) AS c
-      FROM grams WHERE NOT is_test GROUP BY lang, bg
-    ), vocab AS (
-      SELECT CAST(count(DISTINCT bg) AS BIGINT) AS v
-      FROM grams WHERE NOT is_test
-    ), lang_tot AS (
-      SELECT m.lang, CAST(sum(m.c) AS BIGINT) AS t_l,
-             CAST(sum(m.c) + v.v AS BIGINT) AS denom
-      FROM model m CROSS JOIN vocab v GROUP BY m.lang, v.v
-    ), prior_base AS (
-      SELECT lang, CAST(count(*) AS BIGINT) AS nl,
-             CAST(sum(count(*)) OVER () AS BIGINT) AS ntr
-      FROM docs WHERE NOT is_test GROUP BY lang
-    ), modeld AS (
-      SELECT m.lang, m.bg,
-             (CAST(m.c AS DOUBLE) + 1.0) / CAST(lt.denom AS DOUBLE) AS pr
-      FROM model m JOIN lang_tot lt USING (lang)
-    ), {sql_det_ln_steps('modeld', 'pr', 'logp_q', 6)},
-    langd AS (
-      SELECT lt.lang, lt.denom,
-             1.0 / CAST(lt.denom AS DOUBLE) AS pr0,
-             CAST(pb.nl AS DOUBLE) / CAST(pb.ntr AS DOUBLE) AS prior
-      FROM lang_tot lt JOIN prior_base pb USING (lang)
-    ), {sql_det_ln_steps('langd', 'pr0', 'logp0_q', 6)},
-    {sql_det_ln_steps('logp0_q_rel', 'prior', 'prior_q', 6)},
-    test_grams AS (
-      SELECT doc_id, lang AS true_lang, bg, CAST(count(*) AS BIGINT) AS cnt
-      FROM grams WHERE is_test GROUP BY doc_id, lang, bg
-    ), contrib AS (
-      SELECT tg.doc_id, tg.true_lang, l.lang AS cand,
-             CAST(sum(tg.cnt * coalesce(m.logp_q, l.logp0_q)) AS BIGINT) AS s
-      FROM test_grams tg
-      CROSS JOIN prior_q_rel l
-      LEFT JOIN logp_q_rel m ON m.lang = l.lang AND m.bg = tg.bg
-      GROUP BY tg.doc_id, tg.true_lang, l.lang
-    ), test_docs AS (
-      SELECT doc_id, lang AS true_lang FROM docs WHERE is_test
-    ), scores AS (
-      SELECT td.doc_id, td.true_lang, l.lang AS cand,
-             l.prior_q + coalesce(c.s, 0) AS score
-      FROM test_docs td
-      CROSS JOIN prior_q_rel l
-      LEFT JOIN contrib c ON c.doc_id = td.doc_id AND c.cand = l.lang
-    ), pred AS (
-      SELECT doc_id, true_lang, cand AS pred_lang,
-             row_number() OVER (PARTITION BY doc_id
-                                ORDER BY score DESC, cand) AS rn
-      FROM scores
-    )
-    SELECT true_lang, pred_lang, CAST(count(*) AS BIGINT) AS n_docs
-    FROM pred WHERE rn = 1
-    GROUP BY true_lang, pred_lang
-    """
-
-
-@register("ml_naive_bayes_langid", oracle=_nb_oracle())
-def ml_naive_bayes_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multinomial naive Bayes language identifier, trained AND
-    evaluated in one declarative plan: character-bigram counts from a
-    hash-held-out 80% train fold, Laplace-smoothed log-probabilities,
-    argmax scoring of the 20% test fold, confusion matrix out — the
-    classic "train a simple model inside the warehouse" pattern
-    (complements ``text_lang_id``'s fixed heuristic with a LEARNED
-    classifier, and ``stats_logistic_gd``'s regression with a
-    generative model).
-
-    Every log-probability is the deterministic fixed-point ln
-    (functions/detmath.py) quantized to micro-nat int64 ON THE MODEL
-    TABLE (|langs| x |bigrams|-bounded), so per-doc scores are exact
-    integer dot products — bit-identical argmax on both engines.
-    Scale: train counts partial-aggregate; scoring joins test bigrams
-    to the broadcastable model; the per-doc fanout is |langs| (~5).
-    """
-    from ..functions.detmath import det_ln_q
-    from ..functions.textnorm import normalized_text
-
-    t = Tables(spark, sf_dir)
-    h = ((F.col("doc_id") % _P) * NB_HASH_A + NB_HASH_B) % _P
-    docs = t.documents.select(
-        "doc_id",
-        "lang",
-        F.substring(normalized_text(F.col("text")), 1, NB_MAX_CHARS).alias("norm"),
-        (h % NB_TEST_MOD == 0).alias("is_test"),
-    )
-    grams = docs.where(F.length("norm") >= 2).select(
-        "doc_id",
-        "lang",
-        "is_test",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(1), F.length("norm") - 1),
-                lambda i: F.col("norm").substr(i, F.lit(2)),
-            )
-        ).alias("bg"),
-    )
-    train = grams.where(~F.col("is_test"))
-    model = train.groupBy("lang", "bg").agg(F.count(F.lit(1)).alias("c"))
-    vocab = train.agg(F.countDistinct("bg").alias("v"))
-    lang_tot = (
-        model.groupBy("lang")
-        .agg(F.sum("c").alias("t_l"))
-        .crossJoin(F.broadcast(vocab))
-        .select("lang", "t_l", (F.col("t_l") + F.col("v")).alias("denom"))
-    )
-    lang_counts = (
-        docs.where(~F.col("is_test")).groupBy("lang").agg(F.count(F.lit(1)).alias("nl"))
-    )
-    # broadcast 1-row total, not a global window — keeps the registry
-    # free of SinglePartition-fed Window stages (tests/test_plans.py)
-    prior_base = lang_counts.crossJoin(
-        F.broadcast(lang_counts.agg(F.sum("nl").alias("ntr")))
-    )
-    scored_model = model.join(lang_tot, "lang").select(
-        "lang",
-        "bg",
-        det_ln_q(
-            (F.col("c").cast("double") + F.lit(1.0)) / F.col("denom").cast("double"),
-            6,
-        ).alias("logp_q"),
-    )
-    lang_scores = lang_tot.join(prior_base, "lang").select(
-        "lang",
-        det_ln_q(F.lit(1.0) / F.col("denom").cast("double"), 6).alias("logp0_q"),
-        det_ln_q(
-            F.col("nl").cast("double") / F.col("ntr").cast("double"), 6
-        ).alias("prior_q"),
-    )
-    test_grams = (
-        grams.where(F.col("is_test"))
-        .groupBy("doc_id", F.col("lang").alias("true_lang"), "bg")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    contrib = (
-        test_grams.crossJoin(F.broadcast(lang_scores.select("lang", "logp0_q")))
-        .join(
-            F.broadcast(scored_model.withColumnRenamed("lang", "m_lang")),
-            (F.col("m_lang") == F.col("lang")) & (scored_model.bg == test_grams.bg),
-            "left",
-        )
-        .groupBy("doc_id", "true_lang", F.col("lang").alias("cand"))
-        .agg(
-            F.sum(
-                F.col("cnt") * F.coalesce(F.col("logp_q"), F.col("logp0_q"))
-            ).alias("s")
-        )
-    )
-    test_docs = docs.where(F.col("is_test")).select(
-        "doc_id", F.col("lang").alias("true_lang")
-    )
-    scores = (
-        test_docs.crossJoin(F.broadcast(lang_scores.select("lang", "prior_q")))
-        .join(
-            contrib.withColumnRenamed("cand", "lang"),
-            ["doc_id", "true_lang", "lang"],
-            "left",
-        )
-        .select(
-            "doc_id",
-            "true_lang",
-            F.col("lang").alias("cand"),
-            (F.col("prior_q") + F.coalesce(F.col("s"), F.lit(0))).alias("score"),
-        )
-    )
-    pred = scores.select(
-        "*",
-        F.row_number()
-        .over(
-            Window.partitionBy("doc_id").orderBy(F.col("score").desc(), "cand")
-        )
-        .alias("rn"),
-    ).where(F.col("rn") == 1)
-    return pred.groupBy(
-        "true_lang", F.col("cand").alias("pred_lang")
-    ).agg(F.count(F.lit(1)).alias("n_docs"))
-
-
-# ---------------------------------------------------------------------------
-# 14. Decision stump training (1-split tree by exact Gini scan)
-# ---------------------------------------------------------------------------
-
-STUMP_BIN_CENTS = 1_000_000  # $10,000 candidate-threshold bins
-
-
-def _stump_oracle() -> str:
-    return f"""
-    WITH o AS (
-      SELECT CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT)
-               // {STUMP_BIN_CENTS} AS bin,
-             CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
-                  THEN 1 ELSE 0 END AS label
-      FROM orders
-    ), binned AS (
-      SELECT bin, CAST(count(*) AS BIGINT) AS n, CAST(sum(label) AS BIGINT) AS pos
-      FROM o GROUP BY bin
-    ), c AS (
-      SELECT bin,
-             sum(n) OVER (ORDER BY bin) AS nl,
-             sum(pos) OVER (ORDER BY bin) AS posl,
-             sum(n) OVER () AS nt, sum(pos) OVER () AS post
-      FROM binned
-    ), cand AS (
-      SELECT bin, nl, posl, nl - posl AS negl,
-             nt - nl AS nr, post - posl AS posr,
-             (nt - nl) - (post - posl) AS negr, nt, post
-      FROM c WHERE nl < nt
-    ), scored AS (
-      SELECT bin, nl, nr, nt, post, posl, negl, posr, negr,
-             CAST(floor(
-               ((CAST(nl AS DOUBLE) * nl - CAST(posl AS DOUBLE) * posl
-                 - CAST(negl AS DOUBLE) * negl) / CAST(nl AS DOUBLE)
-                + (CAST(nr AS DOUBLE) * nr - CAST(posr AS DOUBLE) * posr
-                   - CAST(negr AS DOUBLE) * negr) / CAST(nr AS DOUBLE))
-               * 1000000.0 + 0.5) AS BIGINT) AS g_q
-      FROM cand
-    ), best AS (
-      SELECT *, row_number() OVER (ORDER BY g_q, bin) AS rn FROM scored
-    )
-    SELECT CAST((bin + 1) * {STUMP_BIN_CENTS} AS BIGINT) AS threshold_cents,
-           CAST(nl AS BIGINT) AS n_left, CAST(nr AS BIGINT) AS n_right, g_q,
-           CAST(((2000000::HUGEINT * (greatest(posl, negl) + greatest(posr, negr))
-                  + nt) // (2::HUGEINT * nt)) AS BIGINT) / 1000000.0
-             AS stump_accuracy
-    FROM best WHERE rn = 1
-    """
-
-
-@register("ml_decision_stump", oracle=_stump_oracle())
-def ml_decision_stump(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Train a one-split decision tree (stump) predicting urgent/high
-    priority from order value, by exact Gini-impurity scan over binned
-    thresholds — the "can the warehouse train the baseline model"
-    primitive, and the building block of boosted trees and of feature
-    split-finding in distributed GBDT (per-feature histogram -> prefix
-    scan -> best split is exactly how LightGBM/XGBoost's histogram
-    mode works at scale).
-
-    Candidates are $10k bins, so the scan is histogram-sized no matter
-    the corpus: one partial-aggregated groupBy, one ordered prefix
-    window over the bins, and the weighted Gini (kept as the exact
-    integer identity n - (pos^2 + neg^2)/n per side, evaluated in
-    doubles from identical integers) ranks splits with a bin
-    tie-break. Stump accuracy is an exact half-up ratio.
-    """
-    t = Tables(spark, sf_dir)
-    o = t.orders.select(
-        (
-            order_cents()
-            / F.lit(STUMP_BIN_CENTS)
-        )
-        .cast("long")
-        .alias("bin"),
-        F.when(
-            F.col("o_orderpriority").isin("1-URGENT", "2-HIGH"), 1
-        )
-        .otherwise(0)
-        .alias("label"),
-    )
-    binned = o.groupBy("bin").agg(
-        F.count(F.lit(1)).alias("n"), F.sum("label").alias("pos")
-    )
-    # The split scan runs as ARRAY algebra inside one final aggregate —
-    # the bin histogram (domain-bounded, ~50 rows) collects into a
-    # sorted struct array, prefix sums come from slice-folds per
-    # candidate, and the argmin is array_min over (g_q, bin, ...)
-    # structs. No global Window/Sort anywhere, so the registry-wide
-    # "SinglePartition only feeds final aggregates" plan property
-    # holds (tests/test_plans.py); the O(bins^2) fold is on the
-    # histogram, never the data.
-    row = binned.agg(
-        F.sort_array(F.collect_list(F.struct("bin", "n", "pos"))).alias("arr")
-    )
-    arr = F.col("arr")
-    zero = F.lit(0).cast("long")
-    nt = F.aggregate(arr, zero, lambda a, x: a + x["n"])
-    post = F.aggregate(arr, zero, lambda a, x: a + x["pos"])
-
-    def prefix(field, i):
-        return F.aggregate(
-            F.slice(arr, F.lit(1), i + 1), zero, lambda a, x: a + x[field]
-        )
-
-    def cand_struct(x, i):
-        nl = prefix("n", i)
-        posl = prefix("pos", i)
-        negl = nl - posl
-        nr = nt - nl
-        posr = post - posl
-        negr = nr - posr
-        dd = lambda c_: c_.cast("double")  # noqa: E731
-        # the last element (nr = 0) is filtered out below, but ANSI
-        # division must still be guarded during the transform
-        g_q = F.when(
-            nr > 0,
-            F.floor(
-                (
-                    (dd(nl) * nl - dd(posl) * posl - dd(negl) * negl) / dd(nl)
-                    + (dd(nr) * nr - dd(posr) * posr - dd(negr) * negr) / dd(nr)
-                )
-                * F.lit(1e6)
-                + F.lit(0.5)
-            ).cast("long"),
-        ).otherwise(F.lit(2**62))
-        return F.struct(
-            g_q.alias("g_q"),
-            x["bin"].alias("bin"),
-            nl.alias("nl"),
-            posl.alias("posl"),
-            negl.alias("negl"),
-            nr.alias("nr"),
-            posr.alias("posr"),
-            negr.alias("negr"),
-        )
-
-    cands = F.filter(
-        F.transform(arr, cand_struct), lambda c_: c_["nl"] < nt
-    )
-    scored = row.select(F.array_min(cands).alias("b"), nt.alias("nt"))
-    from ..functions.exact import round_big_int_ratio
-
-    b = F.col("b")
-    return scored.select(
-        ((b["bin"] + 1) * STUMP_BIN_CENTS).cast("long").alias("threshold_cents"),
-        b["nl"].alias("n_left"),
-        b["nr"].alias("n_right"),
-        b["g_q"].alias("g_q"),
-        round_big_int_ratio(
-            dec38(F.greatest(b["posl"], b["negl"])) + dec38(F.greatest(b["posr"], b["negr"])),
-            dec38(F.col("nt")),
-        ).alias("stump_accuracy"),
     )

@@ -35,6 +35,10 @@ lives in ``operators/stats_dist.py``;
 ``events_rfm_transition_matrix`` and
 ``events_user_activity_lorenz_deciles`` live in
 ``operators/events_users.py`` with the other events queries.
+
+``ml_gains_at_capacity`` lives in ``operators/ml_ranking.py``;
+``ml_conformal_threshold_by_lang`` lives in
+``operators/ml_thresholds.py`` with the other ml queries.
 """
 
 from __future__ import annotations
@@ -314,127 +318,6 @@ def corpus_stratified_sample_audit(spark: SparkSession, sf_dir: str) -> DataFram
                 F.lit(2).cast("decimal(38,0)") * F.col("n_docs") * F.col("target_k"),
             ).alias("tvd"),
         )
-    )
-
-
-# ---------------------------------------------------------------------------
-# 7. Split-conformal calibration threshold per language
-# ---------------------------------------------------------------------------
-
-CONF_ALPHA_NUM = 1
-CONF_ALPHA_DEN = 10  # alpha = 0.1 -> 90% target coverage
-
-
-def _conformal_oracle() -> str:
-    from .ml import _scored_labeled_sql
-    from ..functions.exact import sql_round_int_ratio
-
-    a_n, a_d = CONF_ALPHA_NUM, CONF_ALPHA_DEN
-    return (
-        _scored_labeled_sql()
-        + f"""
-    , cal AS (
-      SELECT lang, score_q FROM scored WHERE doc_id % 2 = 0
-    ), tst AS (
-      SELECT lang, score_q FROM scored WHERE doc_id % 2 = 1
-    ), ncal AS (
-      SELECT lang, CAST(count(*) AS BIGINT) AS n_cal FROM cal GROUP BY lang
-    ), grid AS (
-      SELECT lang, score_q, CAST(count(*) AS BIGINT) AS cnt
-      FROM cal GROUP BY lang, score_q
-    ), cum AS (
-      SELECT lang, score_q,
-             sum(cnt) OVER (PARTITION BY lang ORDER BY score_q) AS cc
-      FROM grid
-    ), thr AS (
-      SELECT n.lang, n.n_cal,
-             (SELECT min(score_q) FROM cum c
-              WHERE c.lang = n.lang
-                AND c.cc >= (({a_d} - {a_n}) * (n.n_cal + 1) + {a_d} - 1) // {a_d})
-               AS thr_score_q
-      FROM ncal n
-    ), cov AS (
-      SELECT t.lang,
-             CAST(count(*) AS BIGINT) AS n_test,
-             CAST(sum(CASE WHEN ts.score_q <= t.thr_score_q THEN 1 ELSE 0 END)
-                  AS BIGINT) AS n_covered
-      FROM thr t JOIN tst ts USING (lang)
-      GROUP BY t.lang
-    )
-    SELECT t.lang, t.n_cal, coalesce(c.n_test, 0) AS n_test, t.thr_score_q,
-           CASE WHEN coalesce(c.n_test, 0) > 0 AND t.thr_score_q IS NOT NULL THEN
-             {sql_round_int_ratio('c.n_covered', 'c.n_test')}
-           END AS coverage
-    FROM thr t LEFT JOIN cov c USING (lang)
-    ORDER BY t.lang
-    """
-    )
-
-
-@register("ml_conformal_threshold_by_lang", oracle=_conformal_oracle())
-def ml_conformal_threshold_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Split-conformal calibration per language: the
-    ceil((1-alpha)(n+1))-th smallest calibration score is the
-    distribution-free threshold whose coverage guarantee (>= 90% of
-    fresh points score at or below it) holds with NO model
-    assumptions — the modern uncertainty-quantification member of the
-    ML family (the other thresholds pick an operating point by
-    cost/Youden; conformal picks one with a finite-sample guarantee),
-    audited here by measuring the realized coverage on the held-out
-    split.
-
-    Deterministic even/odd doc_id split; the order statistic comes
-    from a lang-PARTITIONED cumulative over the <= 10001-value
-    per-lang score grid (never a global window); the coverage probe
-    is one broadcast join of |langs| thresholds back over the test
-    half. Output |langs| rows.
-    """
-    from .ml import _scored_labeled
-    from ..functions.exact import round_int_ratio
-
-    a_n, a_d = CONF_ALPHA_NUM, CONF_ALPHA_DEN
-    t = Tables(spark, sf_dir)
-    sc = _scored_labeled(t)
-    cal = sc.filter(F.col("doc_id") % 2 == 0).select("lang", "score_q")
-    tst = sc.filter(F.col("doc_id") % 2 == 1).select("lang", "score_q")
-    ncal = cal.groupBy("lang").agg(F.count(F.lit(1)).alias("n_cal"))
-    grid = cal.groupBy("lang", "score_q").agg(F.count(F.lit(1)).alias("cnt"))
-    w = (
-        Window.partitionBy("lang")
-        .orderBy("score_q")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    cum = grid.select("lang", "score_q", F.sum("cnt").over(w).alias("cc"))
-    kexp = F.expr(
-        f"(({a_d} - {a_n}) * (n_cal + 1) + {a_d} - 1) div {a_d}"
-    )
-    thr = (
-        ncal.join(cum, "lang", "left")
-        .filter(F.col("cc") >= kexp)
-        .groupBy("lang", "n_cal")
-        .agg(F.min("score_q").alias("thr_score_q"))
-        .join(ncal, ["lang", "n_cal"], "right")
-    )
-    cov = (
-        tst.join(F.broadcast(thr.filter(F.col("thr_score_q").isNotNull())), "lang")
-        .groupBy("lang")
-        .agg(
-            F.count(F.lit(1)).alias("n_test"),
-            F.sum(
-                F.when(F.col("score_q") <= F.col("thr_score_q"), 1).otherwise(0)
-            ).alias("n_covered"),
-        )
-    )
-    return thr.join(cov, "lang", "left").select(
-        "lang",
-        "n_cal",
-        F.coalesce(F.col("n_test"), F.lit(0).cast("long")).alias("n_test"),
-        "thr_score_q",
-        F.when(
-            (F.coalesce(F.col("n_test"), F.lit(0)) > 0)
-            & F.col("thr_score_q").isNotNull(),
-            round_int_ratio(F.col("n_covered"), F.col("n_test")),
-        ).alias("coverage"),
     )
 
 
@@ -781,186 +664,6 @@ def corpus_dedup_cluster_powerlaw(spark: SparkSession, sf_dir: str) -> DataFrame
                 F.col("dsum") + dec38(F.col("n_tail")) * F.lit(1000000), F.col("dsum")
             ),
         ).alias("alpha"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# 15. Gains (capture) at fixed review capacities
-# ---------------------------------------------------------------------------
-
-GAINS_CAPACITIES = (1, 5, 10, 20)
-
-
-def _gains_oracle() -> str:
-    from .ml import _scored_labeled_sql
-    from ..functions.exact import sql_round_big_int_ratio
-
-    caps = ", ".join(str(c) for c in GAINS_CAPACITIES)
-    return (
-        _scored_labeled_sql()
-        + f"""
-    , grid AS (
-      SELECT score_q, CAST(count(*) AS BIGINT) AS cnt,
-             CAST(sum(label) AS BIGINT) AS cpos
-      FROM scored GROUP BY score_q
-    ), cum AS (
-      SELECT a.score_q, a.cnt, a.cpos,
-             CAST(sum(b.cnt) AS BIGINT) AS cc,
-             CAST(sum(b.cpos) AS BIGINT) AS ctp
-      FROM grid a JOIN grid b ON b.score_q >= a.score_q
-      GROUP BY a.score_q, a.cnt, a.cpos
-    ), tot AS (
-      SELECT CAST(sum(cnt) AS BIGINT) AS n, CAST(sum(cpos) AS BIGINT) AS pos
-      FROM grid
-    ), caps AS (SELECT CAST(unnest([{caps}]) AS BIGINT) AS capacity_pct),
-    kk AS (
-      SELECT c.capacity_pct, (c.capacity_pct * t.n + 99) // 100 AS k, t.n, t.pos
-      FROM caps c, tot t
-    ), bnd AS (
-      SELECT k.capacity_pct, k.k, k.n, k.pos,
-             (SELECT max(score_q) FROM cum WHERE cc >= k.k) AS bscore
-      FROM kk k
-    ), fin AS (
-      SELECT b.capacity_pct, b.k, b.n, b.pos,
-             c.cc - c.cnt AS cc_prev, c.ctp - c.cpos AS tp_prev,
-             c.cnt AS cnt_b, c.cpos AS cpos_b
-      FROM bnd b JOIN cum c ON c.score_q = b.bscore
-    )
-    SELECT capacity_pct, k, pos AS n_pos,
-           CASE WHEN pos > 0 AND cnt_b > 0 THEN
-             {sql_round_big_int_ratio(
-                 'tp_prev::HUGEINT * cnt_b + (k - cc_prev)::HUGEINT * cpos_b',
-                 'pos::HUGEINT * cnt_b')}
-           END AS gain,
-           CASE WHEN pos > 0 AND cnt_b > 0 AND k > 0 THEN
-             {sql_round_big_int_ratio(
-                 '(tp_prev::HUGEINT * cnt_b + (k - cc_prev)::HUGEINT * cpos_b) * n',
-                 'pos::HUGEINT * cnt_b * k')}
-           END AS lift
-    FROM fin ORDER BY capacity_pct
-    """
-    )
-
-
-@register("ml_gains_at_capacity", oracle=_gains_oracle())
-def ml_gains_at_capacity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gains table at fixed review capacities: if a human (or a
-    downstream filter) can only inspect the top 1/5/10/20% of
-    documents by classifier score, what share of all positives is
-    captured (gain) and how much better than random is that (lift)?
-    The capacity-indexed view of the ranking the decile lift table
-    reads population-indexed — this is the number an annotation-
-    budget decision actually consumes.
-
-    Boundary tie groups are split EXACTLY: captured = tp_prev + (k -
-    cc_prev) * cpos_b / cnt_b, carried as one big-integer ratio
-    (documents within a tie score-group are exchangeable, so the
-    proportional split is the well-defined answer, same convention as
-    the Lorenz deciles). The descending cumulative is a broadcast
-    non-equi self-join over the <= 10001-row score grid — bounded
-    domain, NO window, no ordered SinglePartition stage; the boundary
-    row per capacity is a max_by final aggregate.
-    """
-    from .ml import _scored_labeled
-    from ..functions.exact import round_big_int_ratio
-
-    t = Tables(spark, sf_dir)
-    sc = _scored_labeled(t)
-    grid = (
-        sc.groupBy("score_q")
-        .agg(F.count(F.lit(1)).alias("cnt"), F.sum("label").alias("cpos"))
-        # the <=10001-row grid feeds four consumers (bins, totals,
-        # boundary probe, in-bin cumulative) — hash the corpus ONCE
-        .localCheckpoint(eager=False)
-    )
-    # Two-pass boundary-bin refinement (the agg_top_value_share
-    # pattern): a direct non-equi self-join cumulative over the
-    # ~10001-row grid costs ~5*10^7 nested-loop pairs (measured ~5 s
-    # at sf0.1); coarse 100-point bins cut that to <= 101^2 + one
-    # bin-partitioned window over <= 100 rows.
-    gb = grid.withColumn("gbin", F.expr("score_q div 100"))
-    bins = gb.groupBy("gbin").agg(
-        F.sum("cnt").alias("bcnt"), F.sum("cpos").alias("bpos")
-    )
-    b2 = bins.select(
-        F.col("gbin").alias("gbin2"), F.col("bcnt").alias("bcnt2"),
-        F.col("bpos").alias("bpos2"),
-    )
-    bcum = (
-        bins.join(F.broadcast(b2), F.col("gbin2") >= F.col("gbin"))
-        .groupBy("gbin", "bcnt", "bpos")
-        .agg(F.sum("bcnt2").alias("ccnt"), F.sum("bpos2").alias("ctp_b"))
-    )
-    tot = grid.agg(F.sum("cnt").alias("n"), F.sum("cpos").alias("pos"))
-    caps = spark.range(1).select(
-        F.explode(
-            F.array(*[F.lit(c).cast("long") for c in GAINS_CAPACITIES])
-        ).alias("capacity_pct")
-    )
-    kk = caps.crossJoin(F.broadcast(tot)).select(
-        "capacity_pct", F.expr("(capacity_pct * n + 99) div 100").alias("k"), "n", "pos"
-    )
-    # boundary bin = highest-score bin whose running count reaches k
-    bbin = (
-        kk.join(F.broadcast(bcum), F.col("ccnt") >= F.col("k"), "left")
-        .groupBy("capacity_pct", "k", "n", "pos")
-        .agg(
-            F.max_by(
-                F.struct("gbin", "bcnt", "bpos", "ccnt", "ctp_b"), F.col("gbin")
-            ).alias("b")
-        )
-        .select(
-            "capacity_pct", "k", "n", "pos",
-            F.col("b.gbin").alias("bbin"),
-            (F.col("b.ccnt") - F.col("b.bcnt")).alias("hi_cc"),
-            (F.col("b.ctp_b") - F.col("b.bpos")).alias("hi_tp"),
-        )
-    )
-    w_in = (
-        Window.partitionBy("capacity_pct", "bbin")
-        .orderBy(F.col("score_q").desc())
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    inbin = gb.join(F.broadcast(bbin), gb.gbin == F.col("bbin"))
-    cum_in = inbin.select(
-        "capacity_pct", "k", "n", "pos", "score_q", "cnt", "cpos",
-        (F.col("hi_cc") + F.sum("cnt").over(w_in)).alias("cc"),
-        (F.col("hi_tp") + F.sum("cpos").over(w_in)).alias("ctp"),
-    )
-    fin = (
-        cum_in.filter(F.col("cc") >= F.col("k"))
-        .groupBy("capacity_pct", "k", "n", "pos")
-        .agg(
-            F.max_by(
-                F.struct("cc", "ctp", "cnt", "cpos"), F.col("score_q")
-            ).alias("b")
-        )
-        .select(
-            "capacity_pct", "k", "n", "pos",
-            (F.col("b.cc") - F.col("b.cnt")).alias("cc_prev"),
-            (F.col("b.ctp") - F.col("b.cpos")).alias("tp_prev"),
-            F.col("b.cnt").alias("cnt_b"),
-            F.col("b.cpos").alias("cpos_b"),
-        )
-    )
-    cap_num = dec38(F.col("tp_prev")) * F.col("cnt_b") + dec38(
-        F.col("k") - F.col("cc_prev")
-    ) * F.col("cpos_b")
-    return fin.select(
-        "capacity_pct",
-        "k",
-        F.col("pos").alias("n_pos"),
-        F.when(
-            (F.col("pos") > 0) & (F.col("cnt_b") > 0),
-            round_big_int_ratio(cap_num, dec38(F.col("pos")) * F.col("cnt_b")),
-        ).alias("gain"),
-        F.when(
-            (F.col("pos") > 0) & (F.col("cnt_b") > 0) & (F.col("k") > 0),
-            round_big_int_ratio(
-                cap_num * F.col("n"),
-                dec38(F.col("pos")) * F.col("cnt_b") * F.col("k"),
-            ),
-        ).alias("lift"),
     )
 
 

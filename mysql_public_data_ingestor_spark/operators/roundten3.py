@@ -33,6 +33,10 @@ with the other stats queries.
 ``events_decayed_value_halflife`` live in
 ``operators/events_series.py``; ``events_type_audience_jaccard`` lives
 in ``operators/events_users.py`` with the other events queries.
+
+``ml_isotonic_calibration_pav`` and ``ml_spiegelhalter_z_calibration``
+live in ``operators/ml_calibration.py``; ``ml_fairness_threshold_gaps``
+lives in ``operators/ml_thresholds.py`` with the other ml queries.
 """
 
 from __future__ import annotations
@@ -41,315 +45,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions.exact import dec38, halfup_div, sql_halfup_div
+from ..functions.exact import halfup_div, sql_halfup_div
 from ..registry import register
 from ..tables import Tables
-
-
-# ---------------------------------------------------------------------------
-# 4. Isotonic (PAV) calibration over a bounded score-bin grid
-# ---------------------------------------------------------------------------
-
-ISO_BINS = 20
-
-
-# Shared CTE chain from the scored corpus to the PAV minimax fit
-# (bins/pre/segs/inner_min/fit) — consumed by the isotonic op below
-# AND the PAV-vs-ROC-hull audit in roundtwelve9.py (one derivation,
-# two consumers). Append after _scored_labeled_sql().
-def _sql_iso_fit_ctes() -> str:
-    b = ISO_BINS
-    return f"""
-    bins AS (
-      SELECT CAST(least(score_q // {10000 // b}, {b - 1}) AS BIGINT) AS bin,
-             CAST(count(*) AS BIGINT) AS n,
-             CAST(sum(label) AS BIGINT) AS pos
-      FROM scored GROUP BY 1
-    ), pre AS (
-      SELECT a.bin, a.n, a.pos,
-             CAST(count(*) AS BIGINT) AS r,
-             CAST(sum(b.n) AS BIGINT) AS cn,
-             CAST(sum(b.pos) AS BIGINT) AS cp
-      FROM bins a JOIN bins b ON b.bin <= a.bin
-      GROUP BY a.bin, a.n, a.pos
-    ), segs AS (
-      SELECT i.r AS ri, j.r AS rj,
-             (j.cp - i.cp + i.pos) AS p,
-             (j.cn - i.cn + i.n) AS nn
-      FROM pre i JOIN pre j ON j.r >= i.r
-    ), inner_min AS (
-      SELECT k.bin, k.n, k.pos, s.ri, min(s.p / s.nn) AS mn
-      FROM pre k JOIN segs s ON s.ri <= k.r AND s.rj >= k.r
-      GROUP BY k.bin, k.n, k.pos, s.ri
-    ), fit AS (
-      SELECT bin, n, pos, max(mn) AS v
-      FROM inner_min GROUP BY bin, n, pos
-    )
-    """
-
-
-def _iso_oracle() -> str:
-    from .ml import _scored_labeled_sql
-    from ..functions.exact import sql_round_int_ratio
-
-    return (
-        _scored_labeled_sql()
-        + ", "
-        + _sql_iso_fit_ctes()
-        + f"""
-    SELECT bin, n, pos,
-           {sql_round_int_ratio('pos', 'n')} AS raw_rate,
-           CAST(floor(v * 1000000.0 + 0.5) AS BIGINT) / 1000000.0 AS iso_rate
-    FROM fit
-    """
-    )
-
-
-@register("ml_isotonic_calibration_pav", oracle=_iso_oracle())
-def ml_isotonic_calibration_pav(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Isotonic-regression (PAV) calibration of the hashed-feature
-    classifier against the rule gate over a fixed 20-bin score grid —
-    the nonparametric companion to the Platt-style linear recalibration
-    (ml_calibration_slope_intercept) and the reliability diagram: the
-    fitted value is the best MONOTONE probability curve in L².
-
-    Instead of the sequential pool-adjacent-violators sweep (useless
-    on a cluster), the fit uses the closed-form minimax identity
-    v_k = max_{i≤k} min_{j≥k} (pos(i..j)/n(i..j)) over PREFIX SUMS —
-    an O(B³) dataflow over the B=20-bin POST-AGGREGATION grid (≤ 210
-    segment rows, ≤ 4.2k candidate rows TOTAL, regardless of corpus
-    size), so the heavy work is one partial-aggregated scan of the
-    documents. Segment averages compare as p/n int64→double divisions
-    (one correctly-rounded IEEE op, bit-identical cross-engine;
-    distinct fractions with denominators ≤ corpus size are separated
-    by ≥ 1/n² ≫ double ulp, so min/max never straddle a rounding
-    ambiguity); the output quantizes once at 1e-6. The replica test
-    asserts the fitted curve is monotone and matches a reference PAV.
-    """
-    from ..functions.exact import round_int_ratio
-
-    t = Tables(spark, sf_dir)
-    fit = _iso_fit(_iso_bins(t))
-    return fit.select(
-        "bin",
-        "n",
-        "pos",
-        round_int_ratio(F.col("pos"), F.col("n")).alias("raw_rate"),
-        (
-            F.floor(F.col("v") * F.lit(1000000.0) + F.lit(0.5)).cast("long")
-            / F.lit(1e6)
-        ).alias("iso_rate"),
-    )
-
-
-def _iso_bins(t: Tables):
-    """(bin, n, pos) over the fixed ISO_BINS score grid — shared with
-    the PAV/hull audit in roundtwelve9.py."""
-    from .ml import _scored_labeled
-
-    b = ISO_BINS
-    s = _scored_labeled(t)
-    return s.groupBy(
-        F.least(F.floor(F.col("score_q") / F.lit(10000 // b)), F.lit(b - 1))
-        .cast("long")
-        .alias("bin")
-    ).agg(F.count(F.lit(1)).alias("n"), F.sum("label").alias("pos"))
-
-
-def _iso_fit(bins):
-    """PAV fit via the prefix-sum minimax identity over the bounded
-    bin grid -> (bin, n, pos, v double). Shared Spark twin of
-    ``_sql_iso_fit_ctes``."""
-    bb = bins.select(
-        F.col("bin").alias("bin_b"), F.col("n").alias("n_b"), F.col("pos").alias("p_b")
-    )
-    pre = (
-        bins.join(F.broadcast(bb), F.col("bin_b") <= F.col("bin"))
-        .groupBy("bin", "n", "pos")
-        .agg(
-            F.count(F.lit(1)).alias("r"),
-            F.sum("n_b").alias("cn"),
-            F.sum("p_b").alias("cp"),
-        )
-    )
-    pi = pre.select(
-        F.col("r").alias("ri"),
-        F.col("cn").alias("cn_i"),
-        F.col("cp").alias("cp_i"),
-        F.col("n").alias("n_i"),
-        F.col("pos").alias("p_i"),
-    )
-    pj = pre.select(
-        F.col("r").alias("rj"), F.col("cn").alias("cn_j"), F.col("cp").alias("cp_j")
-    )
-    segs = pi.join(F.broadcast(pj), F.col("rj") >= F.col("ri")).select(
-        "ri",
-        "rj",
-        (F.col("cp_j") - F.col("cp_i") + F.col("p_i")).alias("p"),
-        (F.col("cn_j") - F.col("cn_i") + F.col("n_i")).alias("nn"),
-    )
-    k = pre.select("bin", "n", "pos", F.col("r").alias("rk"))
-    cand = k.join(
-        F.broadcast(segs),
-        (F.col("ri") <= F.col("rk")) & (F.col("rj") >= F.col("rk")),
-    ).select("bin", "n", "pos", "ri", (F.col("p") / F.col("nn")).alias("val"))
-    inner = cand.groupBy("bin", "n", "pos", "ri").agg(F.min("val").alias("mn"))
-    return inner.groupBy("bin", "n", "pos").agg(F.max("mn").alias("v"))
-
-
-# ---------------------------------------------------------------------------
-# 5. Fairness gaps at a fixed decision threshold
-# ---------------------------------------------------------------------------
-
-FAIR_THRESHOLD = 5000
-
-
-def _fairness_oracle() -> str:
-    from .ml import _scored_labeled_sql
-
-    th = FAIR_THRESHOLD
-
-    def rates(prefix: str) -> str:
-        return f"""
-             CAST(count(*) AS BIGINT) AS {prefix}n,
-             CAST(sum(CASE WHEN score_q >= {th} THEN 1 ELSE 0 END) AS BIGINT)
-               AS {prefix}sel,
-             CAST(sum(label) AS BIGINT) AS {prefix}pos,
-             CAST(sum(CASE WHEN score_q >= {th} AND label = 1 THEN 1 ELSE 0 END)
-                  AS BIGINT) AS {prefix}tp,
-             CAST(sum(CASE WHEN score_q >= {th} AND label = 0 THEN 1 ELSE 0 END)
-                  AS BIGINT) AS {prefix}fp"""
-
-    def hq(num: str, den: str) -> str:
-        # half-up 1e-6 quantized ratio as the INTEGER magnitude (not
-        # yet divided) so gap arithmetic stays in exact int64 space
-        return f"((2000000::BIGINT*({num}) + ({den})) // (2*({den})))"
-
-    return (
-        _scored_labeled_sql()
-        + f"""
-    , per_lang AS (
-      SELECT lang, {rates('')}
-      FROM scored GROUP BY lang
-    ), gstats AS (
-      SELECT {rates('g_')}
-      FROM scored
-    ), q AS (
-      SELECT l.lang, l.n, l.sel, l.pos,
-             {hq('l.sel', 'l.n')} AS selq,
-             CASE WHEN l.pos > 0 THEN {hq('l.tp', 'l.pos')} END AS tprq,
-             CASE WHEN l.n - l.pos > 0 THEN {hq('l.fp', 'l.n - l.pos')} END
-               AS fprq,
-             {hq('g.g_sel', 'g.g_n')} AS g_selq,
-             CASE WHEN g.g_pos > 0 THEN {hq('g.g_tp', 'g.g_pos')} END AS g_tprq,
-             CASE WHEN g.g_n - g.g_pos > 0
-                  THEN {hq('g.g_fp', 'g.g_n - g.g_pos')} END AS g_fprq
-      FROM per_lang l, gstats g
-    )
-    SELECT lang, n, sel, pos,
-           selq / 1000000.0 AS sel_rate,
-           tprq / 1000000.0 AS tpr,
-           fprq / 1000000.0 AS fpr,
-           (selq - g_selq) / 1000000.0 AS dp_gap,
-           CASE WHEN tprq IS NOT NULL AND fprq IS NOT NULL
-                 AND g_tprq IS NOT NULL AND g_fprq IS NOT NULL
-                THEN greatest(abs(tprq - g_tprq), abs(fprq - g_fprq)) / 1000000.0
-           END AS eo_gap
-    FROM q
-    """
-    )
-
-
-@register("ml_fairness_threshold_gaps", oracle=_fairness_oracle())
-def ml_fairness_threshold_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Group-fairness audit of the hashed classifier at the deployed
-    decision threshold (score_q ≥ 5000): per-language selection rate,
-    TPR and FPR against the rule-gate label, plus the two standard
-    gaps vs the global rates — demographic-parity gap (selection-rate
-    difference) and an equalized-odds gap (max of |ΔTPR|, |ΔFPR|).
-    The per-language AUC (ml_auc_by_lang) asks whether RANKING quality
-    is even across groups; this asks whether the DECISION at the
-    chosen operating point is — a filter can have equal AUC everywhere
-    and still select one language at twice the rate.
-
-    One partial-aggregated scan of the documents produces both the
-    per-lang (≤ 5 rows) and global sufficient statistics; rates are
-    exact half-up 1e-6 quantities (round_int_ratio) so the gap
-    subtractions are differences of identical doubles on both engines.
-    Degenerate groups (no positives / no negatives) yield NULL TPR/FPR
-    and NULL eo_gap identically. Gap arithmetic runs on the INTEGER
-    1e-6 magnitudes (one final /10⁶ division per output) — subtracting
-    two already-divided doubles would reintroduce the engine-rounding
-    flake round_int_ratio exists to kill.
-    """
-    from .ml import _scored_labeled
-
-    th = FAIR_THRESHOLD
-    t = Tables(spark, sf_dir)
-    s = _scored_labeled(t)
-    sel = F.when(F.col("score_q") >= th, 1).otherwise(0)
-
-    def hq(num, den):
-        # non-negative counts: half-up integer magnitude of num/den 1e-6
-        a = F.lit(2000000) * num + den
-        b = F.lit(2) * den
-        return ((a - a % b) / b).cast("long")
-
-    def aggs():
-        return [
-            F.count(F.lit(1)).alias("n"),
-            F.sum(sel).alias("sel"),
-            F.sum("label").alias("pos"),
-            F.sum(sel * F.col("label")).alias("tp"),
-            F.sum(sel * (1 - F.col("label"))).alias("fp"),
-        ]
-
-    per_lang = s.groupBy("lang").agg(*aggs())
-    glob = s.agg(*aggs()).select(
-        hq(F.col("sel"), F.col("n")).alias("g_selq"),
-        F.when(F.col("pos") > 0, hq(F.col("tp"), F.col("pos"))).alias("g_tprq"),
-        F.when(
-            F.col("n") - F.col("pos") > 0,
-            hq(F.col("fp"), F.col("n") - F.col("pos")),
-        ).alias("g_fprq"),
-    )
-    q = per_lang.crossJoin(F.broadcast(glob)).select(
-        "lang",
-        "n",
-        "sel",
-        "pos",
-        hq(F.col("sel"), F.col("n")).alias("selq"),
-        F.when(F.col("pos") > 0, hq(F.col("tp"), F.col("pos"))).alias("tprq"),
-        F.when(
-            F.col("n") - F.col("pos") > 0,
-            hq(F.col("fp"), F.col("n") - F.col("pos")),
-        ).alias("fprq"),
-        "g_selq",
-        "g_tprq",
-        "g_fprq",
-    )
-    m = F.lit(1e6)
-    return q.select(
-        "lang",
-        "n",
-        "sel",
-        "pos",
-        (F.col("selq") / m).alias("sel_rate"),
-        (F.col("tprq") / m).alias("tpr"),
-        (F.col("fprq") / m).alias("fpr"),
-        ((F.col("selq") - F.col("g_selq")) / m).alias("dp_gap"),
-        F.when(
-            F.col("tprq").isNotNull()
-            & F.col("fprq").isNotNull()
-            & F.col("g_tprq").isNotNull()
-            & F.col("g_fprq").isNotNull(),
-            F.greatest(
-                F.abs(F.col("tprq") - F.col("g_tprq")),
-                F.abs(F.col("fprq") - F.col("g_fprq")),
-            )
-            / m,
-        ).alias("eo_gap"),
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -956,89 +654,6 @@ def similarity_ivf_nprobe_recall_curve(spark: SparkSession, sf_dir: str) -> Data
             "n_found",
             round_int_ratio(F.col("n_found"), F.col("n_true")).alias("recall"),
         )
-    )
-
-
-# ---------------------------------------------------------------------------
-# 16. Spiegelhalter calibration Z test per language
-# ---------------------------------------------------------------------------
-
-
-def _spiegelhalter_oracle() -> str:
-    from .ml import _scored_labeled_sql
-    from ..functions.exact import sql_round_big_int_ratio
-
-    return (
-        _scored_labeled_sql()
-        + f"""
-    , terms AS (
-      SELECT lang,
-             CAST(count(*) AS BIGINT) AS n,
-             CAST(sum((10000 * label - score_q)::HUGEINT
-                      * (10000 - 2 * score_q)) AS HUGEINT) AS num_s,
-             CAST(sum((10000 - 2 * score_q)::HUGEINT * (10000 - 2 * score_q)
-                      * score_q * (10000 - score_q)) AS HUGEINT) AS var_s
-      FROM scored GROUP BY lang
-    )
-    SELECT lang, n,
-           CASE WHEN var_s > 0 THEN
-             {sql_round_big_int_ratio(
-                 '(CASE WHEN num_s < 0 THEN -1 ELSE 1 END) * num_s * num_s',
-                 '10000::HUGEINT * var_s')}
-           END AS z_signed_sq
-    FROM terms
-    """
-    )
-
-
-@register("ml_spiegelhalter_z_calibration", oracle=_spiegelhalter_oracle())
-def ml_spiegelhalter_z_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spiegelhalter's calibration Z test of the hashed classifier
-    against the rule gate, per language: Z = Σ(y−p)(1−2p) /
-    √(Σ(1−2p)²p(1−p)) — the SIGNIFICANCE member of the calibration
-    family (ECE/MCE measure the size of miscalibration, the Brier
-    decomposition attributes it; Spiegelhalter tests whether it
-    exceeds chance given n). Reported as the signed squared statistic
-    sign(Z)·Z², the house exact form for √-normalized tests (the CCF
-    op's convention): with p = score_q/10⁴ every sum is an exact
-    integer after clearing 10⁴ powers — numerator·10⁸ =
-    Σ(10⁴y−q)(10⁴−2q), variance·10¹⁶ = Σ(10⁴−2q)²q(10⁴−q) — and
-    sign(Z)·Z² = sign·num²/(10⁴·var) is one round_big_int_ratio
-    (num² ≤ ~10²⁹ at sf1×10, inside decimal(38)/HUGEINT).
-
-    One partial-aggregated scan of the scored corpus to ≤ 5 language
-    rows; perfectly-confident degenerate groups (var = 0) yield NULL
-    identically on both engines.
-    """
-    from .ml import _scored_labeled
-    from ..functions.exact import round_big_int_ratio
-
-    t = Tables(spark, sf_dir)
-    s = _scored_labeled(t)
-    q = F.col("score_q")
-    one_2q = F.lit(10000) - 2 * q
-    terms = s.groupBy("lang").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(dec38((F.lit(10000) * F.col("label") - q)) * dec38(one_2q)).alias(
-            "num_s"
-        ),
-        F.sum(
-            dec38(one_2q) * dec38(one_2q) * dec38(q) * dec38(F.lit(10000) - q)
-        ).alias("var_s"),
-    )
-    sign = F.when(F.col("num_s") < 0, F.lit(-1)).otherwise(F.lit(1)).cast(
-        "decimal(38,0)"
-    )
-    return terms.select(
-        "lang",
-        "n",
-        F.when(
-            F.col("var_s") > 0,
-            round_big_int_ratio(
-                sign * F.col("num_s") * F.col("num_s"),
-                F.lit(10000).cast("decimal(38,0)") * F.col("var_s"),
-            ),
-        ).alias("z_signed_sq"),
     )
 
 

@@ -18,13 +18,15 @@ with the other stats queries.
 
 ``events_session_duration_histogram`` lives in
 ``operators/events_sequence.py`` with the other events queries.
+
+``ml_cost_optimal_threshold`` lives in ``operators/ml_thresholds.py``
+with the other ml queries.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from ..registry import register
 from ..tables import Tables
@@ -102,95 +104,6 @@ def text_code_detection_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         "total_symbols",
         round_int_ratio(F.col("n_code_like"), F.col("n_docs")).alias("code_share"),
     )
-
-
-# ---------------------------------------------------------------------------
-# 4. Cost-sensitive optimal threshold (expected-cost minimizer)
-# ---------------------------------------------------------------------------
-
-COST_FP = 1
-COST_FN = 5
-
-
-def _cost_threshold_oracle() -> str:
-    from .ml import _scored_labeled_sql
-
-    return (
-        _scored_labeled_sql()
-        + f"""
-    , grid AS (
-      SELECT score_q,
-             CAST(count(*) AS BIGINT) AS cnt,
-             CAST(sum(label) AS BIGINT) AS cpos
-      FROM scored GROUP BY score_q
-    ), tot AS (
-      SELECT CAST(sum(cnt) AS BIGINT) AS n, CAST(sum(cpos) AS BIGINT) AS pos
-      FROM grid
-    ), cum AS (
-      SELECT score_q,
-             sum(cnt) OVER (ORDER BY score_q DESC) AS pred_pos,
-             sum(cpos) OVER (ORDER BY score_q DESC) AS tp
-      FROM grid
-    ), costs AS (
-      SELECT c.score_q AS threshold,
-             CAST(c.tp AS BIGINT) AS tp,
-             CAST(c.pred_pos - c.tp AS BIGINT) AS fp,
-             CAST(t.pos - c.tp AS BIGINT) AS fn,
-             CAST(t.n - c.pred_pos - (t.pos - c.tp) AS BIGINT) AS tn,
-             CAST({COST_FP} * (c.pred_pos - c.tp)
-                  + {COST_FN} * (t.pos - c.tp) AS BIGINT) AS cost
-      FROM cum c, tot t
-    )
-    SELECT threshold, tp, fp, fn, tn, cost
-    FROM costs ORDER BY cost, threshold LIMIT 1
-    """
-    )
-
-
-@register("ml_cost_optimal_threshold", oracle=_cost_threshold_oracle())
-def ml_cost_optimal_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cost-sensitive operating point: the score threshold minimizing
-    expected cost C_FP*FP + C_FN*FN (false negatives 5x false
-    positives — the asymmetric regime of a KEEP/DROP corpus gate,
-    where discarding a good document costs more than keeping a bad
-    one) — the decision-theoretic selector beside the symmetric
-    Youden J (``ml_youden_optimal_threshold``): same ROC cumulative,
-    different objective, and the two chosen thresholds differ exactly
-    when the cost ratio says they should.
-
-    Confusion counts come from one descending cumulative over the
-    <= 10001-value score grid (bounded domain, same class as Youden);
-    cost is exact integer arithmetic with literal weights; the argmin
-    is a TakeOrdered(1) with the threshold as total-order tiebreak.
-    """
-    from .ml import _scored_labeled
-
-    t = Tables(spark, sf_dir)
-    sc = _scored_labeled(t)
-    grid = sc.groupBy("score_q").agg(
-        F.count(F.lit(1)).alias("cnt"), F.sum("label").alias("cpos")
-    )
-    tot = grid.agg(F.sum("cnt").alias("n"), F.sum("cpos").alias("pos"))
-    w_desc = Window.orderBy(F.col("score_q").desc()).rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    cum = grid.select(
-        "score_q",
-        F.sum("cnt").over(w_desc).alias("pred_pos"),
-        F.sum("cpos").over(w_desc).alias("tp"),
-    )
-    costs = cum.crossJoin(F.broadcast(tot)).select(
-        F.col("score_q").alias("threshold"),
-        F.col("tp"),
-        (F.col("pred_pos") - F.col("tp")).alias("fp"),
-        (F.col("pos") - F.col("tp")).alias("fn"),
-        (F.col("n") - F.col("pred_pos") - (F.col("pos") - F.col("tp"))).alias("tn"),
-        (
-            F.lit(COST_FP) * (F.col("pred_pos") - F.col("tp"))
-            + F.lit(COST_FN) * (F.col("pos") - F.col("tp"))
-        ).alias("cost"),
-    )
-    return costs.orderBy("cost", "threshold").limit(1)
 
 
 # ---------------------------------------------------------------------------

@@ -12,6 +12,10 @@ against the full registry inventory before design.
 
 Reference parity note: the reference (Go ingestion pipeline) has no
 analytics; these extend SURVEY §2.C text / ML / dedup / privacy.
+
+``ml_adaptive_calibration_error`` lives in
+``operators/ml_calibration.py``; ``ml_fbeta_optimal_thresholds`` lives
+in ``operators/ml_thresholds.py`` with the other ml queries.
 """
 
 from __future__ import annotations
@@ -102,288 +106,6 @@ def text_honore_r_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).cast("long"),
         ).alias("honore_r_milli"),
     ).orderBy("lang")
-
-
-# ---------------------------------------------------------------------------
-# 2. Adaptive (equal-mass) calibration error
-# ---------------------------------------------------------------------------
-
-ACE_BINS = 10
-
-
-def _ace_oracle() -> str:
-    from .ml import _scored_labeled_sql
-
-    hd = sql_halfup_div
-    k = ACE_BINS
-    return (
-        _scored_labeled_sql()
-        + f"""
-    , grid AS (
-      SELECT score_q, CAST(count(*) AS BIGINT) AS n,
-             CAST(sum(label) AS BIGINT) AS pos
-      FROM scored GROUP BY score_q
-    ), nn AS (SELECT CAST(sum(n) AS BIGINT) AS total FROM grid),
-    cum AS (
-      SELECT score_q, n, pos,
-             coalesce(sum(n) OVER (ORDER BY score_q
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS before
-      FROM grid
-    ), binned AS (
-      SELECT least(CAST({k} * c.before // nn.total AS BIGINT), {k - 1}) AS bin,
-             c.n, c.pos, c.score_q
-      FROM cum c, nn
-    ), bins AS (
-      SELECT bin, CAST(count(*) AS BIGINT) AS n_values,
-             CAST(sum(n) AS BIGINT) AS n_b,
-             CAST(sum(pos) AS BIGINT) AS pos_b,
-             CAST(sum(CAST(score_q AS HUGEINT) * n) AS HUGEINT) AS s_b
-      FROM binned GROUP BY bin
-    ), gaps AS (
-      SELECT bin, n_b, pos_b, CAST(100 * s_b AS BIGINT) AS exp_pos_micro,
-             CAST({hd('100::HUGEINT * abs(s_b - 10000 * pos_b)', 'n_b')}
-                  AS BIGINT) AS gap_micro
-      FROM bins
-    ), tot AS (
-      SELECT CAST({hd('CAST(sum(gap_micro) AS HUGEINT)',
-                      'CAST(count(*) AS HUGEINT)')} AS BIGINT) AS ace
-      FROM gaps
-    )
-    SELECT g.bin, g.n_b, g.pos_b, g.exp_pos_micro, g.gap_micro,
-           t.ace AS ace_micro
-    FROM gaps g, tot t ORDER BY g.bin
-    """
-    )
-
-
-@register("ml_adaptive_calibration_error", _ace_oracle())
-def ml_adaptive_calibration_error(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Adaptive (equal-mass) calibration error over {ACE_BINS}
-    quantile bins of the classifier score: per bin |mean score -
-    positive rate|, averaged with EQUAL bin weight. The fixed-width
-    reliability diagram (``ml_expected_calibration_error``) lets
-    sparse tail bins hide behind dense middle bins; ACE's equal-mass
-    binning is the accepted fix (Nixon et al. 2019) and the pair
-    (ECE, ACE) diverging localizes WHERE the miscalibration lives.
-
-    Exactness: bin assignment is integer arithmetic on the score-grid
-    cumulative (bin = K*cum_before // N, capped — every score VALUE
-    lands wholly in one bin, deterministic on both engines); per-bin
-    gaps reduce to 100*|S_b - 10^4 pos_b| / n_b half-up micro (one
-    quantization per bin); ACE is the half-up mean of those <= {ACE_BINS}
-    quantized gaps.
-
-    Scale shape: one scored scan to the <= 10001-value grid; the
-    cumulative runs over the POST-AGGREGATION grid (allowlist class);
-    <= {ACE_BINS} rows out.
-    """
-    from pyspark.sql.window import Window
-
-    from .ml import _scored_labeled
-
-    k = ACE_BINS
-    t = Tables(spark, sf_dir)
-    grid = _scored_labeled(t).groupBy("score_q").agg(
-        F.count(F.lit(1)).alias("n"), F.sum("label").alias("pos")
-    )
-    nn = grid.agg(F.sum("n").cast("long").alias("total"))
-    w = Window.orderBy("score_q").rowsBetween(Window.unboundedPreceding, -1)
-    cum = grid.select(
-        "score_q",
-        "n",
-        "pos",
-        F.coalesce(F.sum("n").over(w), F.lit(0)).cast("long").alias("before"),
-    )
-    binned = cum.crossJoin(F.broadcast(nn)).select(
-        F.least(
-            F.floor(k * F.col("before") / F.col("total")), F.lit(k - 1)
-        )
-        .cast("long")
-        .alias("bin"),
-        "n",
-        "pos",
-        "score_q",
-    )
-    bins = binned.groupBy("bin").agg(
-        F.count(F.lit(1)).cast("long").alias("n_values"),
-        F.sum("n").cast("long").alias("n_b"),
-        F.sum("pos").cast("long").alias("pos_b"),
-        F.sum(dec38(F.col("score_q")) * F.col("n")).alias("s_b"),
-    )
-    gaps = bins.select(
-        "bin",
-        "n_b",
-        "pos_b",
-        (F.lit(100).cast("decimal(38,0)") * F.col("s_b")).cast("long").alias(
-            "exp_pos_micro"
-        ),
-        halfup_div(
-            F.lit(100).cast("decimal(38,0)")
-            * F.abs(F.col("s_b") - dec38(10000 * F.col("pos_b"))),
-            dec38(F.col("n_b")),
-        )
-        .cast("long")
-        .alias("gap_micro"),
-    )
-    tot = gaps.agg(
-        halfup_div(dec38(F.sum("gap_micro")), dec38(F.count(F.lit(1))))
-        .cast("long")
-        .alias("ace")
-    )
-    return (
-        gaps.crossJoin(F.broadcast(tot))
-        .select("bin", "n_b", "pos_b", "exp_pos_micro", "gap_micro",
-                F.col("ace").alias("ace_micro"))
-        .orderBy("bin")
-    )
-
-
-# ---------------------------------------------------------------------------
-# 3. F-beta-optimal thresholds over the score grid
-# ---------------------------------------------------------------------------
-
-FBETA_SQ = ((1, 4), (1, 1), (4, 1))  # beta^2 as (num, den): 0.25, 1, 4
-
-
-def _fbeta_oracle() -> str:
-    from .ml import _scored_labeled_sql
-
-    hd = sql_halfup_div
-    betas = ", ".join(f"({n}, {d})" for n, d in FBETA_SQ)
-    return (
-        _scored_labeled_sql()
-        + f"""
-    , grid AS (
-      SELECT score_q, CAST(count(*) AS BIGINT) AS n,
-             CAST(sum(label) AS BIGINT) AS pos
-      FROM scored GROUP BY score_q
-    ), tot AS (
-      SELECT CAST(sum(n) AS BIGINT) AS nn, CAST(sum(pos) AS BIGINT) AS p
-      FROM grid
-    ), cum AS (
-      -- from the top: selecting score >= v
-      SELECT score_q AS v,
-             sum(n) OVER (ORDER BY score_q DESC
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS n_sel,
-             sum(pos) OVER (ORDER BY score_q DESC
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS tp
-      FROM grid
-    ), betas(bn, bd) AS (VALUES {betas}),
-    scoredth AS (
-      SELECT b.bn, b.bd, c.v, c.n_sel, c.tp,
-             (c.n_sel - c.tp) AS fp, (t.p - c.tp) AS fn,
-             {hd('1000000::HUGEINT * (b.bd + b.bn) * c.tp',
-                 '(b.bd + b.bn) * c.tp + b.bn * (t.p - c.tp)'
-                 ' + b.bd * (c.n_sel - c.tp)')} AS f_micro
-      FROM cum c, tot t, betas b
-      WHERE (b.bd + b.bn) * c.tp + b.bn * (t.p - c.tp)
-            + b.bd * (c.n_sel - c.tp) > 0
-    ), best AS (
-      SELECT bn, bd, v, n_sel, tp, fp, fn, f_micro,
-             row_number() OVER (PARTITION BY bn, bd
-               ORDER BY f_micro DESC, v ASC) AS r
-      FROM scoredth
-    )
-    SELECT CAST(bn AS BIGINT) AS beta_sq_num, CAST(bd AS BIGINT) AS beta_sq_den,
-           CAST(v AS BIGINT) AS best_threshold_q,
-           CAST(n_sel AS BIGINT) AS n_selected,
-           CAST(tp AS BIGINT) AS tp, CAST(fp AS BIGINT) AS fp,
-           CAST(fn AS BIGINT) AS fn,
-           CAST(f_micro AS BIGINT) AS fbeta_micro
-    FROM best WHERE r = 1 ORDER BY bn * 1.0 / bd
-    """
-    )
-
-
-@register("ml_fbeta_optimal_thresholds", _fbeta_oracle())
-def ml_fbeta_optimal_thresholds(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """F-beta-optimal decision thresholds over the classifier score
-    grid for beta^2 in (1/4, 1, 4) — precision-weighted (F0.5),
-    balanced (F1) and recall-weighted (F2): F_beta = (1+b^2) TP /
-    ((1+b^2) TP + b^2 FN + FP), maximized exactly over every
-    achievable threshold. ``ml_youden_optimal_threshold`` and
-    ``ml_cost_optimal_threshold`` optimize rate-based objectives; the
-    F family is the PREVALENCE-SENSITIVE one a retrieval/filter
-    pipeline actually reports, and the three-point spread shows how
-    the operating point moves as the objective trades precision for
-    recall.
-
-    Exactness: TP/FP/FN come off the descending score-grid cumulative
-    (exact integers); each F is ONE half-up micro division with exact
-    integer beta^2 = bn/bd weights; the argmax uses (F desc,
-    threshold asc) — deterministic, lowest threshold on micro ties.
-
-    Scale shape: one scored scan to the <= 10001-value grid; the
-    cumulative and per-beta ranking run over the POST-AGGREGATION
-    grid (allowlist class); 3 rows out.
-    """
-    from pyspark.sql.window import Window
-
-    from .ml import _scored_labeled
-
-    t = Tables(spark, sf_dir)
-    grid = _scored_labeled(t).groupBy("score_q").agg(
-        F.count(F.lit(1)).alias("n"), F.sum("label").alias("pos")
-    )
-    tot = grid.agg(
-        F.sum("n").cast("long").alias("nn"), F.sum("pos").cast("long").alias("p")
-    )
-    w = Window.orderBy(F.col("score_q").desc()).rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    cum = grid.select(
-        F.col("score_q").alias("v"),
-        F.sum("n").over(w).cast("long").alias("n_sel"),
-        F.sum("pos").over(w).cast("long").alias("tp"),
-    )
-    betas = grid.sparkSession.createDataFrame(
-        [(n, d) for n, d in FBETA_SQ], "bn long, bd long"
-    )
-    den = (
-        (F.col("bd") + F.col("bn")) * F.col("tp")
-        + F.col("bn") * (F.col("p") - F.col("tp"))
-        + F.col("bd") * (F.col("n_sel") - F.col("tp"))
-    )
-    scoredth = (
-        cum.crossJoin(F.broadcast(tot))
-        .crossJoin(F.broadcast(betas))
-        .filter(den > 0)
-        .select(
-            "bn",
-            "bd",
-            "v",
-            "n_sel",
-            "tp",
-            (F.col("n_sel") - F.col("tp")).alias("fp"),
-            (F.col("p") - F.col("tp")).alias("fn"),
-            halfup_div(
-                F.lit(1_000_000).cast("decimal(38,0)")
-                * (F.col("bd") + F.col("bn"))
-                * F.col("tp"),
-                dec38(den),
-            )
-            .cast("long")
-            .alias("f_micro"),
-        )
-    )
-    wb = Window.partitionBy("bn", "bd").orderBy(
-        F.col("f_micro").desc(), F.col("v").asc()
-    )
-    return (
-        scoredth.withColumn("r", F.row_number().over(wb))
-        .filter(F.col("r") == 1)
-        .select(
-            F.col("bn").alias("beta_sq_num"),
-            F.col("bd").alias("beta_sq_den"),
-            F.col("v").cast("long").alias("best_threshold_q"),
-            F.col("n_sel").alias("n_selected"),
-            "tp",
-            "fp",
-            "fn",
-            F.col("f_micro").alias("fbeta_micro"),
-        )
-        .orderBy(F.col("beta_sq_num").cast("double") / F.col("beta_sq_den"))
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -11,6 +11,9 @@ inventory before design.
 
 Reference parity note: the reference (Go ingestion pipeline) has no
 analytics; these extend SURVEY §2.C graph / ML / corpus management.
+
+``ml_ppv_prevalence_grid`` lives in ``operators/ml_thresholds.py`` with
+the other ml queries.
 """
 
 from __future__ import annotations
@@ -21,124 +24,6 @@ from pyspark.sql import functions as F
 from ..functions.exact import dec38, halfup_div, sql_halfup_div
 from ..registry import register
 from ..tables import Tables
-
-
-# ---------------------------------------------------------------------------
-# 2. PPV/NPV under prevalence shift at the fixed gate threshold
-# ---------------------------------------------------------------------------
-
-PPV_THRESHOLD = 5000  # the fairness-op fixed operating point
-PPV_PREVALENCE_MILLI = (10, 50, 100, 250, 500)
-
-
-def _ppv_oracle() -> str:
-    from .ml import _scored_labeled_sql
-
-    hd = sql_halfup_div
-    th = PPV_THRESHOLD
-    ps = ", ".join(str(x) for x in PPV_PREVALENCE_MILLI)
-    return (
-        _scored_labeled_sql()
-        + f"""
-    , conf AS (
-      SELECT CAST(sum(CASE WHEN label = 1 AND score_q >= {th} THEN 1 ELSE 0 END)
-                  AS HUGEINT) AS tp,
-             CAST(sum(CASE WHEN label = 1 AND score_q < {th} THEN 1 ELSE 0 END)
-                  AS HUGEINT) AS fn,
-             CAST(sum(CASE WHEN label = 0 AND score_q >= {th} THEN 1 ELSE 0 END)
-                  AS HUGEINT) AS fp,
-             CAST(sum(CASE WHEN label = 0 AND score_q < {th} THEN 1 ELSE 0 END)
-                  AS HUGEINT) AS tn
-      FROM scored
-    ), pis AS (SELECT CAST(unnest([{ps}]) AS BIGINT) AS pi_milli),
-    adj AS (
-      -- Bayes: ppv(pi) = pi*se / (pi*se + (1-pi)(1-sp)); with
-      -- se = tp/(tp+fn), sp = tn/(tn+fp), clear denominators:
-      -- ppv = pi*tp*(tn+fp) / (pi*tp*(tn+fp) + (1000-pi)*fp*(tp+fn))
-      SELECT p.pi_milli, c.tp, c.fp, c.fn, c.tn,
-             (p.pi_milli * c.tp * (c.tn + c.fp)) AS a,
-             ((1000 - p.pi_milli) * c.fp * (c.tp + c.fn)) AS b,
-             ((1000 - p.pi_milli) * c.tn * (c.tp + c.fn)) AS cnpv,
-             (p.pi_milli * c.fn * (c.tn + c.fp)) AS dnpv
-      FROM pis p, conf c
-    )
-    SELECT pi_milli AS prevalence_milli,
-           CASE WHEN a + b > 0 THEN
-             CAST({hd('1000000::HUGEINT * a', 'a + b')} AS BIGINT)
-           END AS ppv_micro,
-           CASE WHEN cnpv + dnpv > 0 THEN
-             CAST({hd('1000000::HUGEINT * cnpv', 'cnpv + dnpv')} AS BIGINT)
-           END AS npv_micro
-    FROM adj ORDER BY pi_milli
-    """
-    )
-
-
-@register("ml_ppv_prevalence_grid", _ppv_oracle())
-def ml_ppv_prevalence_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PPV/NPV of the classifier's fixed 0.5 operating point under a
-    PREVALENCE grid (1%, 5%, 10%, 25%, 50%): Bayes-adjust the
-    measured sensitivity/specificity to each deployment base rate —
-    ppv(pi) = pi se / (pi se + (1-pi)(1-sp)). Sensitivity and
-    specificity travel across datasets; PPV does NOT, and deploying a
-    gate tuned on a balanced benchmark onto a 1%-positive stream is
-    THE classic precision collapse. The threshold family optimizes ON
-    the evaluation corpus (`ml_youden_optimal_threshold`,
-    `ml_fbeta_optimal_thresholds`); this op prices the SAME operating
-    point everywhere else.
-
-    Exactness: the 2x2 confusion counts are exact; clearing the
-    se/sp denominators makes each adjusted value ONE half-up micro
-    division of exact integer products with milli prevalence weights;
-    NULL-guarded degenerate margins.
-
-    Scale shape: one scored scan to four counters; a 5-row grid
-    broadcast; 5 rows out.
-    """
-    from .ml import _scored_labeled
-
-    t = Tables(spark, sf_dir)
-    s = _scored_labeled(t)
-    th = PPV_THRESHOLD
-    conf = s.agg(
-        F.sum(
-            F.when((F.col("label") == 1) & (F.col("score_q") >= th), 1).otherwise(0)
-        ).alias("tp"),
-        F.sum(
-            F.when((F.col("label") == 1) & (F.col("score_q") < th), 1).otherwise(0)
-        ).alias("fn"),
-        F.sum(
-            F.when((F.col("label") == 0) & (F.col("score_q") >= th), 1).otherwise(0)
-        ).alias("fp"),
-        F.sum(
-            F.when((F.col("label") == 0) & (F.col("score_q") < th), 1).otherwise(0)
-        ).alias("tn"),
-    )
-    pis = s.sparkSession.range(1).select(
-        F.explode(
-            F.array(*[F.lit(x).cast("long") for x in PPV_PREVALENCE_MILLI])
-        ).alias("pi_milli")
-    )
-    m6 = F.lit(1_000_000).cast("decimal(38,0)")
-    a = dec38(F.col("pi_milli")) * F.col("tp") * (F.col("tn") + F.col("fp"))
-    b = dec38(1000 - F.col("pi_milli")) * F.col("fp") * (F.col("tp") + F.col("fn"))
-    cnpv = dec38(1000 - F.col("pi_milli")) * F.col("tn") * (
-        F.col("tp") + F.col("fn")
-    )
-    dnpv = dec38(F.col("pi_milli")) * F.col("fn") * (F.col("tn") + F.col("fp"))
-    return (
-        pis.crossJoin(F.broadcast(conf))
-        .select(
-            F.col("pi_milli").alias("prevalence_milli"),
-            F.when(a + b > 0, halfup_div(m6 * a, a + b).cast("long")).alias(
-                "ppv_micro"
-            ),
-            F.when(
-                cnpv + dnpv > 0, halfup_div(m6 * cnpv, cnpv + dnpv).cast("long")
-            ).alias("npv_micro"),
-        )
-        .orderBy("prevalence_milli")
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -15,6 +15,9 @@ for the classifier score, and a bottom-k sketch mergeability audit.
 
 ``events_fano_factor_curve`` lives in ``operators/events_series.py``
 with the other events queries.
+
+``ml_permutation_importance_score`` lives in ``operators/ml_models.py``
+with the other ml queries.
 """
 
 from __future__ import annotations
@@ -107,169 +110,6 @@ def text_punct_profile_chi2_by_source(spark: SparkSession, sf_dir: str) -> DataF
             .alias("chi2_contrib_micro"),
         )
         .orderBy("source", "cls")
-    )
-
-
-# ---------------------------------------------------------------------------
-# 5. Deterministic permutation importance of the classifier score
-# ---------------------------------------------------------------------------
-
-PERM_BUCKETS = 256  # derangement buckets (partitioned windows only)
-
-
-def _perm_importance_oracle() -> str:
-    from ..functions.exact import sql_round_big_int_ratio
-    from .ml import _scored_labeled_sql
-
-    def auc_cte(rel: str, score: str, out: str) -> str:
-        # mid-rank Mann-Whitney identity off the score-bin cumulative:
-        # 2*R1 = sum over bins n1b * (2*below + nb + 1);
-        # AUC = (2R1 - n1(n1+1)) / (2 n1 n0)
-        return f"""
-    {out}_bins AS (
-      SELECT {score} AS s, CAST(count(*) AS HUGEINT) AS nb,
-             CAST(sum(label) AS HUGEINT) AS n1b
-      FROM {rel} GROUP BY {score}
-    ), {out}_cum AS (
-      SELECT a.s, a.nb, a.n1b,
-             CAST(coalesce(sum(b.nb), 0) AS HUGEINT) AS below
-      FROM {out}_bins a LEFT JOIN {out}_bins b ON b.s < a.s
-      GROUP BY a.s, a.nb, a.n1b
-    ), {out}_t AS (
-      SELECT CAST(sum(n1b * (2 * below + nb + 1)) AS HUGEINT) AS r1x2,
-             CAST(sum(n1b) AS HUGEINT) AS n1,
-             CAST(sum(nb - n1b) AS HUGEINT) AS n0
-      FROM {out}_cum
-    )"""
-
-    return (
-        _scored_labeled_sql()
-        + f"""
-    , bucketed AS (
-      SELECT doc_id, score_q, label,
-             ('0x' || substr(sha256(CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT
-               % {PERM_BUCKETS} AS bkt
-      FROM scored
-    ), base AS (
-      SELECT bkt, score_q, label,
-             row_number() OVER (PARTITION BY bkt ORDER BY doc_id) AS rid
-      FROM bucketed
-    ), perm_s AS (
-      SELECT bkt,
-             row_number() OVER (
-               PARTITION BY bkt
-               ORDER BY ('0x' || substr(sha256(CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT,
-                        doc_id) AS rid,
-             score_q AS perm_score
-      FROM bucketed
-    ), perm AS (
-      SELECT b.label, p.perm_score
-      FROM base b JOIN perm_s p ON p.bkt = b.bkt AND p.rid = b.rid
-    ), {auc_cte('base', 'score_q', 'o')}, {auc_cte('perm', 'perm_score', 'p')}
-    SELECT CAST(o_t.n1 AS BIGINT) AS n_pos, CAST(o_t.n0 AS BIGINT) AS n_neg,
-           {sql_round_big_int_ratio(
-               'o_t.r1x2 - o_t.n1 * (o_t.n1 + 1)', '2 * o_t.n1 * o_t.n0')} AS auc,
-           {sql_round_big_int_ratio(
-               'p_t.r1x2 - p_t.n1 * (p_t.n1 + 1)', '2 * p_t.n1 * p_t.n0')} AS auc_permuted,
-           {sql_round_big_int_ratio(
-               '(o_t.r1x2 - o_t.n1 * (o_t.n1 + 1)) - (p_t.r1x2 - p_t.n1 * (p_t.n1 + 1))',
-               '2 * o_t.n1 * o_t.n0')} AS importance
-    FROM o_t, p_t
-    """
-    )
-
-
-@register("ml_permutation_importance_score", _perm_importance_oracle())
-def ml_permutation_importance_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PERMUTATION IMPORTANCE of the quality-classifier score against
-    the rule-gate label: mid-rank Mann-Whitney AUC on the true
-    (score, label) pairing minus the AUC after a DETERMINISTIC
-    derangement — scores re-paired to documents inside each of
-    {PERM_BUCKETS} sha-derived buckets by (sha order vs doc_id order),
-    the reproducible stand-in for a random shuffle that preserves the
-    score marginal exactly. A small drop says the apparent AUC is a
-    pairing artifact, not score skill.
-
-    Exactness: AUC via the MID-RANK identity computed from the
-    score-bin cumulative — 2*R1 = sum over bins n1b (2 below + nb + 1),
-    AUC = (2R1 - n1(n1+1))/(2 n1 n0) — all exact integers in both
-    engines (mid-ranks absorb the tie correction; no per-row ranks).
-
-    Scale shape: score bins are bounded (score_q has <= 10001 values),
-    so the rank algebra runs on the bin table via a broadcast non-equi
-    cumulative; the derangement uses PARTITIONED windows only (256
-    hash buckets — never a global row_number), and the re-pairing is a
-    (bucket, rid) equi-join.
-    """
-    from pyspark.sql.window import Window
-
-    from ..functions.exact import round_big_int_ratio
-    from ..functions.textnorm import sha256_prefix_i64
-    from .ml import _scored_labeled
-
-    t = Tables(spark, sf_dir)
-    scored = _scored_labeled(t).select("doc_id", "score_q", "label")
-    # localCheckpoint: the derangement (base + perm_s) and both AUC
-    # branches would otherwise re-run the sha-heavy scored scan (the
-    # decontaminate-op convention)
-    bucketed = (
-        scored.withColumn("hv", sha256_prefix_i64(F.col("doc_id").cast("string")))
-        .withColumn("bkt", F.col("hv") % PERM_BUCKETS)
-        .localCheckpoint(eager=False)
-    )
-    w_id = Window.partitionBy("bkt").orderBy("doc_id")
-    w_sha = Window.partitionBy("bkt").orderBy("hv", "doc_id")
-    base = bucketed.select(
-        "bkt", "score_q", "label", F.row_number().over(w_id).alias("rid")
-    )
-    perm_s = bucketed.select(
-        "bkt",
-        F.row_number().over(w_sha).alias("rid"),
-        F.col("score_q").alias("perm_score"),
-    )
-    perm = base.select("bkt", "rid", "label").join(perm_s, ["bkt", "rid"])
-
-    def auc_terms(df, score_col):
-        bins = df.groupBy(F.col(score_col).alias("s")).agg(
-            dec38(F.count(F.lit(1))).alias("nb"),
-            dec38(F.sum("label")).alias("n1b"),
-        )
-        b2 = bins.select(F.col("s").alias("s2"), F.col("nb").alias("nb2"))
-        cum = (
-            bins.join(F.broadcast(b2), F.col("s2") < F.col("s"), "left")
-            .groupBy("s", "nb", "n1b")
-            .agg(
-                F.coalesce(F.sum("nb2"), F.lit(0).cast("decimal(38,0)")).alias(
-                    "below"
-                )
-            )
-        )
-        return cum.agg(
-            F.sum(
-                F.col("n1b") * (2 * F.col("below") + F.col("nb") + 1)
-            ).alias("r1x2"),
-            F.sum("n1b").alias("n1"),
-            F.sum(F.col("nb") - F.col("n1b")).alias("n0"),
-        )
-
-    o = auc_terms(base, "score_q")
-    p = auc_terms(perm, "perm_score").select(
-        F.col("r1x2").alias("pr1x2"),
-        F.col("n1").alias("pn1"),
-        F.col("n0").alias("pn0"),
-    )
-    j = o.crossJoin(F.broadcast(p))
-    num_o = F.col("r1x2") - F.col("n1") * (F.col("n1") + 1)
-    num_p = F.col("pr1x2") - F.col("pn1") * (F.col("pn1") + 1)
-    den = 2 * F.col("n1") * F.col("n0")
-    return j.select(
-        F.col("n1").cast("long").alias("n_pos"),
-        F.col("n0").cast("long").alias("n_neg"),
-        round_big_int_ratio(num_o, den).alias("auc"),
-        round_big_int_ratio(num_p, 2 * F.col("pn1") * F.col("pn0")).alias(
-            "auc_permuted"
-        ),
-        round_big_int_ratio(num_o - num_p, den).alias("importance"),
     )
 
 

@@ -541,7 +541,7 @@ def text_quality_classifier_score(spark: SparkSession, sf_dir: str) -> DataFrame
     # staged projections so the sha2-per-token milli-sum materializes
     # once before the score arithmetic references it repeatedly (the
     # round_int_ratio expansion would otherwise re-embed the whole
-    # aggregate ~4x — see ml._scored_labeled)
+    # aggregate ~4x — see ml_scores._scored_labeled_build)
     stats = t.documents.select(
         "doc_id", "lang", whitespace_tokens(F.col("text")).alias("toks")
     ).select(

@@ -91,6 +91,10 @@ def _ensure_loaded() -> None:
         graph_structure,
         layout,
         ml,
+        ml_calibration,
+        ml_models,
+        ml_ranking,
+        ml_thresholds,
         multimodal,
         pipeline,
         privacy,
@@ -120,9 +124,7 @@ def _ensure_loaded() -> None:
         roundtenb,
         roundthirteen3,
         roundthirteen4,
-        roundthirteen5,
         roundthirteen6,
-        roundthirteen7,
         roundthirteen8,
         roundtwelve,
         roundtwelve10,
@@ -131,7 +133,6 @@ def _ensure_loaded() -> None:
         roundtwelve4,
         roundtwelve5,
         roundtwelve8,
-        roundtwelve9,
         similarity,
         sketches,
         stats,

@@ -59,8 +59,8 @@ def test_holm_critical_ladder():
 
 
 def test_rbo_weight_table():
-    """roundtwelve9.RBO_W_MICRO[d] = round(1e6 (1-p) p^(d-1)), p=0.9."""
-    from mysql_public_data_ingestor_spark.operators.roundtwelve9 import (
+    """ml_ranking.RBO_W_MICRO[d] = round(1e6 (1-p) p^(d-1)), p=0.9."""
+    from mysql_public_data_ingestor_spark.operators.ml_ranking import (
         RBO_DEPTH,
         RBO_W_MICRO,
     )

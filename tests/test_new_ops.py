@@ -621,15 +621,13 @@ def test_auc_matches_numpy_midrank(spark, sf_dir):
     same quantized scores; calibration deciles partition the corpus."""
     import numpy as np
 
-    from mysql_public_data_ingestor_spark.operators.ml import (
-        _scored_labeled,
-        ml_auc_by_lang,
-        ml_calibration_curve,
-    )
+    from mysql_public_data_ingestor_spark.operators.ml_calibration import ml_calibration_curve
+    from mysql_public_data_ingestor_spark.operators.ml_ranking import ml_auc_by_lang
+    from mysql_public_data_ingestor_spark.operators.ml_scores import scored_labeled
     from mysql_public_data_ingestor_spark.tables import Tables
 
     t = Tables(spark, sf_dir)
-    rows = _scored_labeled(t).collect()
+    rows = scored_labeled(t).collect()
     by_lang: dict[str, list] = {}
     for r in rows:
         by_lang.setdefault(r.lang, []).append((r.score_q, r.label))

@@ -45,6 +45,20 @@ NAMES = (
     "stats_tukey_hsd_priority",
     "text_ngram_entropy_curve",
 )
+# The queries roundeleven.py registered before the ml family moved to
+# ``operators/ml_*.py``: the fresh-interpreter check follows them by
+# name.
+MODULE_NAMES = (
+    "corpus_dup_quality_quadrant",
+    "dq_digit_preference_audit",
+    "embedding_norm2_anova_by_label",
+    "ml_brier_skill_score",
+    "privacy_exponential_mechanism_segment",
+    "privacy_membership_inference_audit",
+    "sketch_bottomk_jaccard_users",
+    "sketch_kmv_union_users",
+    "text_ngram_entropy_curve",
+)
 # (name, fn, oracle, doc) of each
 QUERIES = [
     (s.name, s.fn, s.oracle, s.doc) for s in (all_queries()[n] for n in NAMES)
@@ -156,8 +170,8 @@ def test_activate_registers_cleanly_in_subprocess():
         "import json\n"
         "from mysql_public_data_ingestor_spark.operators import roundeleven\n"
         "from mysql_public_data_ingestor_spark import registry\n"
-        "specs = [s for s in registry.all_queries().values()\n"
-        "         if s.fn.__module__ == roundeleven.__name__]\n"
+        f"names = {MODULE_NAMES!r}\n"
+        "specs = [registry.all_queries()[n] for n in names]\n"
         "no_oracle = [s.name for s in specs if s.oracle is None]\n"
         "assert not no_oracle, f'registered without oracle: {no_oracle}'\n"
         "print(json.dumps(sorted(s.name for s in specs)))\n"
@@ -168,9 +182,7 @@ def test_activate_registers_cleanly_in_subprocess():
     )
     assert out.returncode == 0, out.stderr[-2000:]
     registered = json.loads(out.stdout.strip().splitlines()[-1])
-    assert registered == sorted(
-        s.name for s in all_queries().values() if s.fn.__module__ == roundeleven.__name__
-    )
+    assert registered == sorted(MODULE_NAMES)
 
 
 # --- Python replicas ------------------------------------------------------
@@ -574,12 +586,12 @@ def test_sign_test_matches_python(spark, sf_dir):
 
 
 def test_dup_quality_quadrant_matches_python(spark, sf_dir):
-    from mysql_public_data_ingestor_spark.operators.ml import _scored_labeled
+    from mysql_public_data_ingestor_spark.operators.ml_scores import scored_labeled
 
     got = _q("corpus_dup_quality_quadrant", spark, sf_dir)
     t = Tables(spark, sf_dir)
     docs = t.documents.select("doc_id", "text").toPandas()
-    sc = _scored_labeled(t).select("doc_id", "label").toPandas()
+    sc = scored_labeled(t).select("doc_id", "label").toPandas()
     lab = dict(zip(sc["doc_id"], sc["label"]))
     from collections import Counter
 
@@ -605,12 +617,12 @@ def test_dup_quality_quadrant_matches_python(spark, sf_dir):
 
 
 def test_mia_matches_python(spark, sf_dir):
-    from mysql_public_data_ingestor_spark.operators.ml import _scored_labeled
+    from mysql_public_data_ingestor_spark.operators.ml_scores import scored_labeled
 
     gdf = _q("privacy_membership_inference_audit", spark, sf_dir)
     got = {c: gdf[c].iloc[0] for c in gdf.columns}
     t = Tables(spark, sf_dir)
-    sc = _scored_labeled(t).select("doc_id", "score_q").toPandas()
+    sc = scored_labeled(t).select("doc_id", "score_q").toPandas()
     m = roundeleven.MIA_SPLIT_MOD
     from collections import defaultdict
 
@@ -638,11 +650,11 @@ def test_mia_matches_python(spark, sf_dir):
 
 
 def test_bss_matches_python(spark, sf_dir):
-    from mysql_public_data_ingestor_spark.operators.ml import _scored_labeled
+    from mysql_public_data_ingestor_spark.operators.ml_scores import scored_labeled
 
     got = _q("ml_brier_skill_score", spark, sf_dir)
     t = Tables(spark, sf_dir)
-    sc = _scored_labeled(t).select("lang", "score_q", "label").toPandas()
+    sc = scored_labeled(t).select("lang", "score_q", "label").toPandas()
     from collections import defaultdict
 
     acc: dict = defaultdict(lambda: [0, 0, 0])

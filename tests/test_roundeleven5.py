@@ -116,9 +116,9 @@ def test_roc_hull_matches_python(spark, sf_dir):
     # replicate from the op's own binned points, then check hull
     # geometry independently (concavity + dominance)
     got = _q("ml_roc_convex_hull", spark, sf_dir).sort_values("fp_count")
-    from mysql_public_data_ingestor_spark.operators.ml import _scored_labeled
+    from mysql_public_data_ingestor_spark.operators.ml_scores import scored_labeled
 
-    scored = _scored_labeled(Tables(spark, sf_dir)).toPandas()
+    scored = scored_labeled(Tables(spark, sf_dir)).toPandas()
     bins: dict = defaultdict(lambda: [0, 0])
     for r in scored.itertuples():
         b = min(int(r.score_q) // 100, 100)

@@ -185,11 +185,10 @@ def _pav_blocks(bins):
 
 
 def test_pav_reliability_diagram_matches_python(spark, sf_dir):
-    from mysql_public_data_ingestor_spark.operators.ml import _scored_labeled
-    from mysql_public_data_ingestor_spark.operators.roundten3 import ISO_BINS
+    from mysql_public_data_ingestor_spark.operators.ml_scores import ISO_BINS, scored_labeled
 
     t = Tables(spark, sf_dir)
-    pdf = _scored_labeled(t).select("score_q", "label").toPandas()
+    pdf = scored_labeled(t).select("score_q", "label").toPandas()
     width = 10000 // ISO_BINS
     agg = defaultdict(lambda: [0, 0, 0])  # bin -> [n, pos, ssum]
     for s, lab in zip(pdf["score_q"], pdf["label"]):

@@ -13,6 +13,8 @@ from collections import Counter, defaultdict
 import pytest
 
 from mysql_public_data_ingestor_spark.operators import roundfourteen8 as r148
+from mysql_public_data_ingestor_spark.operators import ml_ranking
+from mysql_public_data_ingestor_spark.operators import ml_thresholds
 from mysql_public_data_ingestor_spark.tables import Tables
 from tools.check_correctness import compare, duck_connection
 
@@ -70,10 +72,10 @@ def test_plan_bars(spark, sf_dir, name):
 
 def _roc_points(spark, sf_dir):
     """Descending-threshold ROC cumulative off the shared scored scan."""
-    from mysql_public_data_ingestor_spark.operators.ml import _scored_labeled
+    from mysql_public_data_ingestor_spark.operators.ml_scores import scored_labeled
 
     pdf = (
-        _scored_labeled(Tables(spark, sf_dir))
+        scored_labeled(Tables(spark, sf_dir))
         .select("score_q", "label")
         .toPandas()
     )
@@ -94,7 +96,7 @@ def _roc_points(spark, sf_dir):
 
 def test_pauc_matches_python(spark, sf_dir):
     cum, nn, p = _roc_points(spark, sf_dir)
-    b = r148.PAUC_B_NUM / r148.PAUC_B_DEN
+    b = ml_ranking.PAUC_B_NUM / ml_ranking.PAUC_B_DEN
     neg = nn - p
     pts = [(0.0, 0.0)] + [((ns - tp) / neg, tp / p) for _, ns, tp in cum]
     a_pico = 0
@@ -146,7 +148,7 @@ def test_eer_matches_python(spark, sf_dir):
 def test_cost_envelope_matches_python(spark, sf_dir):
     cum, nn, p = _roc_points(spark, sf_dir)
     neg = nn - p
-    d = r148.COST_PC_DEN
+    d = ml_thresholds.COST_PC_DEN
     rows = [(0, 0)] + [(ns, tp) for _, ns, tp in cum]
     got = _spec("ml_cost_curve_envelope").fn(spark, sf_dir).toPandas()
     assert list(got["pc_num"]) == list(range(1, d))

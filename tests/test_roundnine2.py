@@ -20,6 +20,8 @@ from mysql_public_data_ingestor_spark.operators import graph_paths
 from mysql_public_data_ingestor_spark.operators import events_sequence
 from mysql_public_data_ingestor_spark.operators import roundnine2 as r92
 from mysql_public_data_ingestor_spark.operators import stats_dist
+from mysql_public_data_ingestor_spark.operators import ml_models
+from mysql_public_data_ingestor_spark.operators import ml_ranking
 from mysql_public_data_ingestor_spark.functions.detmath import ref_det_ln_q
 from mysql_public_data_ingestor_spark.tables import Tables
 
@@ -223,18 +225,18 @@ def test_shard_skew_matches_python(spark, sf_dir, docs_pdf):
 
 
 def test_precision_at_k_matches_python(spark, sf_dir):
-    from mysql_public_data_ingestor_spark.operators.ml import _scored_labeled
+    from mysql_public_data_ingestor_spark.operators.ml_scores import scored_labeled
 
     got = _q("ml_precision_at_k_by_lang", spark, sf_dir)
     t = Tables(spark, sf_dir)
-    sc = _scored_labeled(t).toPandas()
+    sc = scored_labeled(t).toPandas()
     for _, row in got.iterrows():
         g = sc[sc["lang"] == row["lang"]].sort_values(
             ["score_q", "doc_id"], ascending=[False, True]
         )
         n = len(g)
         n_pos = int(g["label"].sum())
-        top = g.head(r92.PAK_K)
+        top = g.head(ml_ranking.PAK_K)
         k_eff = len(top)
         hits = int(top["label"].sum())
         assert int(row["n"]) == n
@@ -536,7 +538,7 @@ def test_uplift_matches_python(spark, sf_dir, events_pdf):
         converted=("event_type", lambda s: int((s == "purchase").any())),
     )
     usr["treat"] = [int(_sha60(str(u)) % 2) for u in usr.index]
-    usr["tier"] = usr["n_views"].clip(upper=r92.UPLIFT_MAX_TIER)
+    usr["tier"] = usr["n_views"].clip(upper=ml_models.UPLIFT_MAX_TIER)
     for _, row in got.iterrows():
         g = usr[usr["tier"] == int(row["tier"])]
         nt = int((g["treat"] == 1).sum())

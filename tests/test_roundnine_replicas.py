@@ -22,6 +22,8 @@ from mysql_public_data_ingestor_spark.operators import (
 from mysql_public_data_ingestor_spark.operators import daily_change
 from mysql_public_data_ingestor_spark.operators import events_users
 from mysql_public_data_ingestor_spark.operators import roundnine
+from mysql_public_data_ingestor_spark.operators import ml_calibration
+from mysql_public_data_ingestor_spark.operators import ml_ranking
 from mysql_public_data_ingestor_spark.registry import all_queries
 from mysql_public_data_ingestor_spark.tables import Tables
 
@@ -229,11 +231,11 @@ def test_harmonic_matches_python(spark, sf_dir, copurchase):
 
 def test_brier_decomposition_matches_python(spark, sf_dir):
     got = _q("ml_brier_decomposition", spark, sf_dir).iloc[0]
-    from mysql_public_data_ingestor_spark.operators.ml import _scored_labeled
+    from mysql_public_data_ingestor_spark.operators.ml_scores import scored_labeled
 
     t = Tables(spark, sf_dir)
-    sc = _scored_labeled(t).select("score_q", "label").toPandas()
-    s = roundnine.BRIER_SCALE
+    sc = scored_labeled(t).select("score_q", "label").toPandas()
+    s = ml_calibration.BRIER_SCALE
     q = sc["score_q"].astype(int).to_numpy()
     lab = sc["label"].astype(int).to_numpy()
     dec = np.minimum(q // 1000, 9)
@@ -288,12 +290,12 @@ def test_page_hinkley_matches_python(spark, sf_dir, orders_pdf):
 def test_auc_jackknife_matches_python(spark, sf_dir):
     import hashlib
 
-    from mysql_public_data_ingestor_spark.operators.ml import _scored_labeled
+    from mysql_public_data_ingestor_spark.operators.ml_scores import scored_labeled
 
     got = _q("ml_auc_jackknife_ci", spark, sf_dir).iloc[0]
     t = Tables(spark, sf_dir)
-    sc = _scored_labeled(t).select("doc_id", "score_q", "label").toPandas()
-    b = roundnine.AUC_JK_BUCKETS
+    sc = scored_labeled(t).select("doc_id", "score_q", "label").toPandas()
+    b = ml_ranking.AUC_JK_BUCKETS
     sc["bucket"] = [
         int(hashlib.sha256(str(int(d)).encode()).hexdigest()[:15], 16) % b
         for d in sc["doc_id"]
@@ -502,11 +504,11 @@ def test_two_way_anova_matches_python(spark, sf_dir, lineitem_pdf, orders_pdf):
 
 
 def test_ece_matches_python(spark, sf_dir):
-    from mysql_public_data_ingestor_spark.operators.ml import _scored_labeled
+    from mysql_public_data_ingestor_spark.operators.ml_scores import scored_labeled
 
     got = _q("ml_expected_calibration_error", spark, sf_dir).iloc[0]
     t = Tables(spark, sf_dir)
-    sc = _scored_labeled(t).select("score_q", "label").toPandas()
+    sc = scored_labeled(t).select("score_q", "label").toPandas()
     s = 10_000
     q = sc["score_q"].astype(int).to_numpy()
     lab = sc["label"].astype(int).to_numpy()
@@ -531,11 +533,11 @@ def test_ece_matches_python(spark, sf_dir):
 
 
 def test_youden_matches_python(spark, sf_dir):
-    from mysql_public_data_ingestor_spark.operators.ml import _scored_labeled
+    from mysql_public_data_ingestor_spark.operators.ml_scores import scored_labeled
 
     got = _q("ml_youden_optimal_threshold", spark, sf_dir).iloc[0]
     t = Tables(spark, sf_dir)
-    sc = _scored_labeled(t).select("score_q", "label").toPandas()
+    sc = scored_labeled(t).select("score_q", "label").toPandas()
     grp = sc.groupby("score_q")["label"].agg(["size", "sum"]).sort_index()
     n_pos = int(grp["sum"].sum())
     n_neg = int((grp["size"] - grp["sum"]).sum())

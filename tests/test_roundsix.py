@@ -176,12 +176,12 @@ def test_holt_matches_python_fold(spark, sf_dir, events_pdf):
 
 
 def test_ndcg_matches_python_ranking(spark, sf_dir):
-    from mysql_public_data_ingestor_spark.operators.ml import _scored_labeled
-    from mysql_public_data_ingestor_spark.operators.roundsix import NDCG_W
+    from mysql_public_data_ingestor_spark.operators.ml_scores import scored_labeled
+    from mysql_public_data_ingestor_spark.operators.ml_ranking import NDCG_W
 
     got = _q("ml_ndcg_by_lang", spark, sf_dir).set_index("lang")
     t = Tables(spark, sf_dir)
-    s = _scored_labeled(t).toPandas()
+    s = scored_labeled(t).toPandas()
     for lang, g in s.groupby("lang"):
         g = g.sort_values(["score_q", "doc_id"], ascending=[False, True])
         labels = g["label"].to_numpy()

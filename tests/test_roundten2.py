@@ -17,6 +17,7 @@ from mysql_public_data_ingestor_spark.operators import events_users
 from mysql_public_data_ingestor_spark.operators import roundten2
 from mysql_public_data_ingestor_spark.operators import stats_rank
 from mysql_public_data_ingestor_spark.operators import stats_tables
+from mysql_public_data_ingestor_spark.operators import ml_thresholds
 from mysql_public_data_ingestor_spark.tables import Tables
 from tools.check_correctness import compare, duck_connection
 
@@ -324,12 +325,12 @@ def test_tvd_pairs_matches_python(spark, sf_dir):
 
 
 def test_conformal_matches_python(spark, sf_dir):
-    from mysql_public_data_ingestor_spark.operators.ml import _scored_labeled
+    from mysql_public_data_ingestor_spark.operators.ml_scores import scored_labeled
 
     got = _q("ml_conformal_threshold_by_lang", spark, sf_dir).sort_values("lang")
     t = Tables(spark, sf_dir)
-    sc = _scored_labeled(t).select("doc_id", "lang", "score_q").toPandas()
-    a_n, a_d = roundten2.CONF_ALPHA_NUM, roundten2.CONF_ALPHA_DEN
+    sc = scored_labeled(t).select("doc_id", "lang", "score_q").toPandas()
+    a_n, a_d = ml_thresholds.CONF_ALPHA_NUM, ml_thresholds.CONF_ALPHA_DEN
     for _, row in got.iterrows():
         sub = sc[sc["lang"] == row["lang"]]
         cal = sorted(int(s) for s in sub[sub["doc_id"] % 2 == 0]["score_q"])
@@ -584,11 +585,11 @@ def test_powerlaw_matches_python(spark, sf_dir):
 
 
 def test_gains_matches_python(spark, sf_dir):
-    from mysql_public_data_ingestor_spark.operators.ml import _scored_labeled
+    from mysql_public_data_ingestor_spark.operators.ml_scores import scored_labeled
 
     got = _q("ml_gains_at_capacity", spark, sf_dir).sort_values("capacity_pct")
     t = Tables(spark, sf_dir)
-    sc = _scored_labeled(t).select("score_q", "label").toPandas()
+    sc = scored_labeled(t).select("score_q", "label").toPandas()
     grid: dict = {}
     for r in sc.itertuples():
         c, p = grid.get(int(r.score_q), (0, 0))

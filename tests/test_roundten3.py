@@ -14,6 +14,8 @@ from mysql_public_data_ingestor_spark.operators import daily_change, daily_spect
 from mysql_public_data_ingestor_spark.operators import events_series
 from mysql_public_data_ingestor_spark.operators import roundten3
 from mysql_public_data_ingestor_spark.operators import stats_dist
+from mysql_public_data_ingestor_spark.operators import ml_scores
+from mysql_public_data_ingestor_spark.operators import ml_thresholds
 from mysql_public_data_ingestor_spark.tables import Tables
 from tools.check_correctness import compare, duck_connection
 
@@ -266,12 +268,12 @@ def _pav_reference(stats):
 def test_isotonic_matches_python(spark, sf_dir):
     from fractions import Fraction
 
-    from mysql_public_data_ingestor_spark.operators.ml import _scored_labeled
+    from mysql_public_data_ingestor_spark.operators.ml_scores import scored_labeled
 
     got = _q("ml_isotonic_calibration_pav", spark, sf_dir).sort_values("bin")
     t = Tables(spark, sf_dir)
-    sc = _scored_labeled(t).select("score_q", "label").toPandas()
-    b = roundten3.ISO_BINS
+    sc = scored_labeled(t).select("score_q", "label").toPandas()
+    b = ml_scores.ISO_BINS
     from collections import defaultdict
 
     agg: dict = defaultdict(lambda: [0, 0])
@@ -324,12 +326,12 @@ def test_isotonic_matches_python(spark, sf_dir):
 
 
 def test_fairness_gaps_match_python(spark, sf_dir):
-    from mysql_public_data_ingestor_spark.operators.ml import _scored_labeled
+    from mysql_public_data_ingestor_spark.operators.ml_scores import scored_labeled
 
     got = _q("ml_fairness_threshold_gaps", spark, sf_dir)
     t = Tables(spark, sf_dir)
-    sc = _scored_labeled(t).select("lang", "score_q", "label").toPandas()
-    th = roundten3.FAIR_THRESHOLD
+    sc = scored_labeled(t).select("lang", "score_q", "label").toPandas()
+    th = ml_thresholds.FAIR_THRESHOLD
 
     def stats(sub):
         n = len(sub)
@@ -819,11 +821,11 @@ def test_ivf_nprobe_curve_matches_python(spark, sf_dir):
 
 
 def test_spiegelhalter_matches_python(spark, sf_dir):
-    from mysql_public_data_ingestor_spark.operators.ml import _scored_labeled
+    from mysql_public_data_ingestor_spark.operators.ml_scores import scored_labeled
 
     got = _q("ml_spiegelhalter_z_calibration", spark, sf_dir)
     t = Tables(spark, sf_dir)
-    sc = _scored_labeled(t).select("lang", "score_q", "label").toPandas()
+    sc = scored_labeled(t).select("lang", "score_q", "label").toPandas()
     from collections import defaultdict
 
     acc: dict = defaultdict(lambda: [0, 0, 0])

@@ -13,6 +13,7 @@ import pytest
 from mysql_public_data_ingestor_spark.operators import daily_change
 from mysql_public_data_ingestor_spark.operators import events_sequence
 from mysql_public_data_ingestor_spark.operators import roundtenb
+from mysql_public_data_ingestor_spark.operators import ml_thresholds
 from mysql_public_data_ingestor_spark.registry import all_queries
 from tools.check_correctness import compare, duck_connection
 
@@ -250,12 +251,12 @@ def test_code_detection_matches_python(spark, sf_dir):
 
 
 def test_cost_optimal_threshold_matches_python(spark, sf_dir):
-    from mysql_public_data_ingestor_spark.operators.ml import _scored_labeled
+    from mysql_public_data_ingestor_spark.operators.ml_scores import scored_labeled
     from mysql_public_data_ingestor_spark.tables import Tables
 
     got = _q("ml_cost_optimal_threshold", spark, sf_dir).iloc[0]
     t = Tables(spark, sf_dir)
-    sc = _scored_labeled(t).select("score_q", "label").toPandas()
+    sc = scored_labeled(t).select("score_q", "label").toPandas()
     grid = (
         sc.assign(one=1)
         .groupby("score_q")
@@ -272,7 +273,7 @@ def test_cost_optimal_threshold_matches_python(spark, sf_dir):
         fp = pred_pos - tp
         fn = pos - tp
         tn = n - pred_pos - fn
-        cost = roundtenb.COST_FP * fp + roundtenb.COST_FN * fn
+        cost = ml_thresholds.COST_FP * fp + ml_thresholds.COST_FN * fn
         key = (cost, int(score_q))
         if best is None or key < best[0]:
             best = (key, (int(score_q), tp, fp, fn, tn, cost))

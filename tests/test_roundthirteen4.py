@@ -13,6 +13,7 @@ from itertools import combinations
 import pytest
 
 from mysql_public_data_ingestor_spark.operators import roundthirteen4 as r134
+from mysql_public_data_ingestor_spark.operators import ml_thresholds
 from mysql_public_data_ingestor_spark.registry import all_queries
 from mysql_public_data_ingestor_spark.tables import Tables
 from tools.check_correctness import compare, duck_connection
@@ -139,7 +140,7 @@ def _scored_py(spark, sf_dir):
 
 def test_ppv_grid_matches_python(spark, sf_dir):
     scored = _scored_py(spark, sf_dir)
-    th = r134.PPV_THRESHOLD
+    th = ml_thresholds.PPV_THRESHOLD
     tp = sum(1 for sq, lab in scored if lab == 1 and sq >= th)
     fn = sum(1 for sq, lab in scored if lab == 1 and sq < th)
     fp = sum(1 for sq, lab in scored if lab == 0 and sq >= th)
@@ -149,9 +150,9 @@ def test_ppv_grid_matches_python(spark, sf_dir):
         .toPandas()
         .set_index("prevalence_milli")
     )
-    assert list(got.index) == list(r134.PPV_PREVALENCE_MILLI)
+    assert list(got.index) == list(ml_thresholds.PPV_PREVALENCE_MILLI)
     prev_ppv = None
-    for pi in r134.PPV_PREVALENCE_MILLI:
+    for pi in ml_thresholds.PPV_PREVALENCE_MILLI:
         a = pi * tp * (tn + fp)
         b = (1000 - pi) * fp * (tp + fn)
         cn = (1000 - pi) * tn * (tp + fn)

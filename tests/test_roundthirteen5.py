@@ -167,11 +167,10 @@ def _pav_blocks(bins):
 
 
 def test_brier_pav_matches_python(spark, sf_dir):
-    from mysql_public_data_ingestor_spark.operators.ml import _scored_labeled
-    from mysql_public_data_ingestor_spark.operators.roundten3 import ISO_BINS
+    from mysql_public_data_ingestor_spark.operators.ml_scores import ISO_BINS, scored_labeled
 
     t = Tables(spark, sf_dir)
-    pdf = _scored_labeled(t).toPandas()
+    pdf = scored_labeled(t).toPandas()
     width = 10000 // ISO_BINS
     per_bin = defaultdict(lambda: [0, 0, 0])  # bin -> [n, pos, ssum]
     sqe = 0

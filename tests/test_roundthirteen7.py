@@ -15,8 +15,8 @@ import pytest
 
 from mysql_public_data_ingestor_spark.functions.detmath import LN2_MICRO
 from mysql_public_data_ingestor_spark.operators import daily_spectral, graph_centrality
-from mysql_public_data_ingestor_spark.operators import roundthirteen7 as r137
 from mysql_public_data_ingestor_spark.operators import stats_dist
+from mysql_public_data_ingestor_spark.operators import ml_thresholds
 from mysql_public_data_ingestor_spark.tables import Tables
 from tools.check_correctness import compare, duck_connection
 
@@ -206,10 +206,10 @@ def test_capability_matches_python(spark, sf_dir):
 
 
 def test_recall_at_precision_matches_python(spark, sf_dir):
-    from mysql_public_data_ingestor_spark.operators.ml import _scored_labeled
+    from mysql_public_data_ingestor_spark.operators.ml_scores import scored_labeled
 
     t = Tables(spark, sf_dir)
-    pdf = _scored_labeled(t).toPandas()
+    pdf = scored_labeled(t).toPandas()
     grid = defaultdict(lambda: [0, 0])
     for s, y in zip(pdf["score_q"], pdf["label"]):
         grid[int(s)][0] += 1
@@ -222,8 +222,8 @@ def test_recall_at_precision_matches_python(spark, sf_dir):
         tp += grid[v][1]
         cum.append((v, n_sel, tp))
     got = _spec("ml_recall_at_precision_floor").fn(spark, sf_dir).toPandas()
-    assert len(got) == len(r137.PRECISION_FLOORS)
-    for (pn, pd_), (_, row) in zip(r137.PRECISION_FLOORS, got.iterrows()):
+    assert len(got) == len(ml_thresholds.PRECISION_FLOORS)
+    for (pn, pd_), (_, row) in zip(ml_thresholds.PRECISION_FLOORS, got.iterrows()):
         assert int(row["floor_num"]) == pn and int(row["floor_den"]) == pd_
         feas = [(v, ns, tp_) for v, ns, tp_ in cum if tp_ * pd_ >= ns * pn]
         if not feas:

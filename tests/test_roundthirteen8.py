@@ -15,8 +15,8 @@ import pytest
 
 from mysql_public_data_ingestor_spark.operators import graph_centrality
 from mysql_public_data_ingestor_spark.operators import daily_hypothesis
-from mysql_public_data_ingestor_spark.operators import roundthirteen8 as r138
 from mysql_public_data_ingestor_spark.operators import stats_dist
+from mysql_public_data_ingestor_spark.operators import ml_thresholds
 from mysql_public_data_ingestor_spark.tables import Tables
 from tools.check_correctness import compare, duck_connection
 
@@ -154,11 +154,11 @@ def test_hub_removal_matches_python(spark, sf_dir):
 
 
 def test_youden_jackknife_matches_python(spark, sf_dir):
-    from mysql_public_data_ingestor_spark.operators.ml import _scored_labeled
+    from mysql_public_data_ingestor_spark.operators.ml_scores import scored_labeled
 
     t = Tables(spark, sf_dir)
-    pdf = _scored_labeled(t).toPandas()
-    B = r138.YJ_BLOCKS
+    pdf = scored_labeled(t).toPandas()
+    B = ml_thresholds.YJ_BLOCKS
     gb = defaultdict(lambda: [0, 0])  # (score, block) -> [n, pos]
     for doc_id, s, y in zip(pdf["doc_id"], pdf["score_q"], pdf["label"]):
         k = (int(s), int(doc_id) % B)

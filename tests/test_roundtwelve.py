@@ -13,6 +13,7 @@ import pytest
 from mysql_public_data_ingestor_spark.operators import graph_structure
 from mysql_public_data_ingestor_spark.operators import events_series
 from mysql_public_data_ingestor_spark.operators import roundtwelve as r12
+from mysql_public_data_ingestor_spark.operators import ml_models
 from mysql_public_data_ingestor_spark.registry import all_queries
 from mysql_public_data_ingestor_spark.tables import Tables
 from tools.check_correctness import compare, duck_connection
@@ -234,11 +235,11 @@ def test_ktruss_matches_python(spark, sf_dir):
 
 
 def test_perm_importance_matches_python(spark, sf_dir):
-    from mysql_public_data_ingestor_spark.operators.ml import _scored_labeled
+    from mysql_public_data_ingestor_spark.operators.ml_scores import scored_labeled
 
     fn, _ = _spec("ml_permutation_importance_score")
     got = fn(spark, sf_dir).toPandas().iloc[0]
-    scored = _scored_labeled(Tables(spark, sf_dir)).select(
+    scored = scored_labeled(Tables(spark, sf_dir)).select(
         "doc_id", "score_q", "label"
     ).toPandas()
     rows = [
@@ -266,7 +267,7 @@ def test_perm_importance_matches_python(spark, sf_dir):
     # bucketed derangement
     per_bucket: dict = defaultdict(list)
     for did, s, l in rows:
-        per_bucket[_sha_i64(str(did)) % r12.PERM_BUCKETS].append((did, s, l))
+        per_bucket[_sha_i64(str(did)) % ml_models.PERM_BUCKETS].append((did, s, l))
     perm_pairs = []
     for bkt, items in per_bucket.items():
         by_id = sorted(items)

@@ -234,11 +234,11 @@ def test_source_drift_matches_python(spark, sf_dir):
 
 
 def test_threshold_transfer_matches_python(spark, sf_dir):
-    from mysql_public_data_ingestor_spark.operators.ml import _scored_labeled
+    from mysql_public_data_ingestor_spark.operators.ml_scores import scored_labeled
 
     fn, _ = _spec("ml_threshold_transfer_audit")
     got = fn(spark, sf_dir).toPandas().iloc[0]
-    scored = _scored_labeled(Tables(spark, sf_dir)).select(
+    scored = scored_labeled(Tables(spark, sf_dir)).select(
         "doc_id", "score_q", "label"
     ).toPandas()
     folds: dict = {0: [], 1: []}

@@ -11,7 +11,9 @@ from collections import Counter, defaultdict
 
 import pytest
 
-from mysql_public_data_ingestor_spark.operators import roundtwelve9 as r129
+from mysql_public_data_ingestor_spark.operators import ml_models
+from mysql_public_data_ingestor_spark.operators import ml_ranking
+from mysql_public_data_ingestor_spark.operators import ml_thresholds
 from mysql_public_data_ingestor_spark.tables import Tables
 from tools.check_correctness import compare, duck_connection
 
@@ -68,7 +70,7 @@ def test_plan_bars(spark, sf_dir, name):
 
 
 def _scored_py(spark, sf_dir):
-    """Replica of ml._scored_labeled: (doc_id, score_q, label, n_chars)."""
+    """Replica of ml_scores.scored_labeled: (doc_id, score_q, label, n_chars)."""
     import hashlib
     import re
 
@@ -123,7 +125,7 @@ def _pav_fit(bins):
 
 
 def test_pav_hull_audit_matches_python(spark, sf_dir, scored):
-    from mysql_public_data_ingestor_spark.operators.roundten3 import ISO_BINS
+    from mysql_public_data_ingestor_spark.operators.ml_scores import ISO_BINS
 
     bins_c = Counter()
     pos_c = Counter()
@@ -177,8 +179,8 @@ def test_dca_matches_python(spark, sf_dir, scored):
         .toPandas()
         .set_index("threshold_milli")
     )
-    assert list(got.index) == list(r129.DCA_THRESHOLDS_MILLI)
-    for t in r129.DCA_THRESHOLDS_MILLI:
+    assert list(got.index) == list(ml_thresholds.DCA_THRESHOLDS_MILLI)
+    for t in ml_thresholds.DCA_THRESHOLDS_MILLI:
         sel = [(sq, lab) for _, sq, lab, _ in scored if sq >= 10 * t]
         tp = sum(lab for _, lab in sel)
         fp = len(sel) - tp
@@ -234,7 +236,7 @@ def test_hosmer_lemeshow_matches_python(spark, sf_dir, scored):
 
 
 def test_weighted_kappa_matches_python(spark, sf_dir, scored):
-    b = r129.KAPPA_BANDS
+    b = ml_models.KAPPA_BANDS
     cells = Counter()
     for _, sq, _, nc in scored:
         cells[(min(sq // (10000 // b), b - 1), min(nc // 1000, b - 1))] += 1
@@ -264,7 +266,7 @@ def test_weighted_kappa_matches_python(spark, sf_dir, scored):
 
 
 def test_rbo_matches_python(spark, sf_dir, scored):
-    d = r129.RBO_DEPTH
+    d = ml_ranking.RBO_DEPTH
     top1 = sorted(scored, key=lambda x: (-x[1], x[0]))[:d]
     top2 = sorted(scored, key=lambda x: (-x[3], x[0]))[:d]
     r1 = {row[0]: i + 1 for i, row in enumerate(top1)}
@@ -273,7 +275,7 @@ def test_rbo_matches_python(spark, sf_dir, scored):
     rbo = 0
     for dep in range(1, d + 1):
         cd = sum(1 for mr in common.values() if mr <= dep)
-        rbo += _halfup_int(r129.RBO_W_MICRO[dep - 1] * cd, dep)
+        rbo += _halfup_int(ml_ranking.RBO_W_MICRO[dep - 1] * cd, dep)
     got = _spec("ml_rank_rbo_overlap").fn(spark, sf_dir).toPandas().iloc[0]
     assert int(got["depth"]) == d
     assert int(got["n_common"]) == len(common)
